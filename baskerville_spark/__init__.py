@@ -5,8 +5,8 @@ A from-scratch rebuild of the *capabilities* of deflect-ca/baskerville
 Spark DataFrame engine over audio clip + transcript tables:
 
 - per-partition column statistics (count / null-rate / min / max,
-  KLL-style quantiles via ``percentile_approx``, HLL distinct via
-  ``approx_count_distinct``)
+  KLL-style quantiles via ``percentile_approx``, DataSketches HLL distinct
+  via ``hll_sketch_agg``)
 - uniqueness on ``clip_id`` with salted two-phase aggregation (skew-safe)
 - referential integrity of transcript keys (broadcast or sort-merge anti-join)
 - distribution drift (PSI + two-sample KS from quantile/histogram sketches)

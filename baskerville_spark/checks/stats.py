@@ -7,10 +7,20 @@ JVM-side built-ins:
 
 - count / null_count          → F.count / F.sum(isnull)    (feature_request_total.py:25-27 analog)
 - min / max                   → F.min / F.max              (base_feature.py:113-116 analog)
-- approx_distinct             → approx_count_distinct (HLL++) — the scale-safe
-  replacement of the reference's exact F.countDistinct
-  (features/feature_unique_ua_total.py:28); the north rule mandates HLL at 10^12.
+- approx_distinct             → hll_sketch_estimate(hll_sketch_agg) — a
+  DataSketches HLL, the scale-safe replacement of the reference's exact
+  F.countDistinct (features/feature_unique_ua_total.py:28); the north rule
+  mandates HLL at 10^12. ``rsd`` maps to the sketch size as
+  lg_k = ceil(2·log2(1.04/rsd)) clamped to [4, 21] (12 at rsd 0.02). It is
+  the sketch stats_state keeps, so equal lg_k gives identical estimates.
 - quantiles                   → percentile_approx (KLL-style sketch)
+
+Why not ``approx_count_distinct``: Spark's HLL++ keeps its registers as
+~410 long fields of the aggregation buffer at rsd 0.02, so five columns
+make a ~2,050-field buffer, and every task regenerates and canonicalizes
+projection code over it — that, not the rows, dominated this aggregate's
+CPU. The DataSketches aggregate carries one binary field per column; it is
+also exact at low cardinality.
 
 Scale: one shuffle keyed on part_id; partial aggregation (map-side combine)
 applies to every expression, including the HLL and quantile sketches, so the
@@ -25,15 +35,21 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from baskerville_spark.checks.stats_state import lg_k_for_rsd, sketchable
+
 DEFAULT_QUANTILES = [0.01, 0.05, 0.25, 0.5, 0.75, 0.95, 0.99]
 
 
-def _aggs_for(col: str, numeric: bool, quantiles: list[float], rsd: float) -> list[Column]:
+def _aggs_for(
+    df: DataFrame, col: str, numeric: bool, quantiles: list[float], lg_k: int
+) -> list[Column]:
     c = F.col(col)
     aggs = [
         F.count(c).alias(f"{col}__count"),
         F.sum(F.isnull(c).cast("long")).alias(f"{col}__null_count"),
-        F.approx_count_distinct(c, rsd).alias(f"{col}__approx_distinct"),
+        F.hll_sketch_estimate(F.hll_sketch_agg(sketchable(df, col), lg_k)).alias(
+            f"{col}__approx_distinct"
+        ),
     ]
     if numeric:
         aggs += [
@@ -73,11 +89,12 @@ def column_stats(
         numeric_cols = numeric_cols if numeric_cols is not None else inferred_num
         other_cols = other_cols if other_cols is not None else inferred_other
 
+    lg_k = lg_k_for_rsd(rsd)
     aggs: list[Column] = []
     for c in numeric_cols:
-        aggs += _aggs_for(c, True, quantiles, rsd)
+        aggs += _aggs_for(df, c, True, quantiles, lg_k)
     for c in other_cols:
-        aggs += _aggs_for(c, False, quantiles, rsd)
+        aggs += _aggs_for(df, c, False, quantiles, lg_k)
 
     wide = df.groupBy(F.col(part_col).alias("part_id")).agg(*aggs)
 

@@ -28,12 +28,16 @@ the default lg_k=14), the same discipline as checks/suite.approx_distinct.
 
 from __future__ import annotations
 
+import math
 from typing import Mapping, Optional, Sequence
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 __all__ = [
+    "sketchable",
+    "lg_k_for_rsd",
     "stats_state",
     "merge_stats_states",
     "finalize_stats",
@@ -45,6 +49,38 @@ __all__ = [
 ]
 
 DEFAULT_LG_K = 14
+
+
+def lg_k_for_rsd(rsd: float) -> int:
+    """Sketch size for a target relative standard deviation: HLL error is
+    1.04/sqrt(2^lg_k), so lg_k = ceil(2·log2(1.04/rsd)), clamped to the
+    [4, 21] range ``hll_sketch_agg`` accepts (12 at rsd 0.02)."""
+    return max(4, min(21, math.ceil(2 * math.log2(1.04 / rsd))))
+
+
+def sketchable(df: DataFrame, name: str) -> Column:
+    """``df[name]`` in a type ``hll_sketch_agg`` accepts (INT, BIGINT,
+    STRING, BINARY), mapped injectively so distinct values stay distinct:
+    native types pass through uncast (no per-row cast on the hot path);
+    small integrals, booleans, dates and timestamps widen losslessly to
+    int/bigint; floating and decimal values use their string form (±0.0
+    folded to 0.0, as SQL equality has it); anything else is hashed."""
+    c = F.col(name)
+    t = df.schema[name].dataType
+    if isinstance(t, (T.IntegerType, T.LongType, T.StringType, T.BinaryType)):
+        return c
+    if isinstance(t, (T.ByteType, T.ShortType, T.BooleanType)):
+        return c.cast("int")
+    if isinstance(t, T.DateType):
+        return F.unix_date(c)
+    if isinstance(t, T.TimestampType):
+        return F.unix_micros(c)
+    if isinstance(t, (T.FloatType, T.DoubleType)):
+        x = c.cast("double")
+        return F.when(x == 0, F.lit(0.0)).otherwise(x).cast("string")
+    if isinstance(t, T.DecimalType):
+        return c.cast("string")
+    return F.xxhash64(c)
 
 
 def stats_state(
@@ -74,7 +110,7 @@ def stats_state(
             F.sum(col).alias(f"{c}_sum"),
         ]
     for c in distinct_cols:
-        aggs.append(F.hll_sketch_agg(c, lg_k).alias(f"{c}_hll"))
+        aggs.append(F.hll_sketch_agg(sketchable(df, c), lg_k).alias(f"{c}_hll"))
     for c, edges in (hist_cols or {}).items():
         aggs.append(_hist_counts(c, edges).alias(f"{c}_hist"))
     return df.groupBy(*group_by).agg(*aggs)

@@ -18,11 +18,14 @@ killed job re-runs only unfinished partitions and re-commits are idempotent
 from __future__ import annotations
 
 import os
+import re
 import uuid
 from datetime import datetime, timezone
+from urllib.parse import urlparse
 
 import pyarrow as pa
 import pyarrow.parquet as pq
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 
 from baskerville_spark import __version__
@@ -42,9 +45,32 @@ _ARROW_SCHEMA = pa.schema(
 )
 
 
+def _local_path(path: str) -> str | None:
+    """Filesystem path of a local manifest location (a plain path or a
+    ``file:`` URI); None for any other ``scheme://`` URI (s3a, hdfs, …)."""
+    if path.startswith("file:"):
+        return urlparse(path).path
+    return None if re.match(r"[A-Za-z][A-Za-z0-9+.-]*://", path) else path
+
+
+def _local_dir(path: str) -> str:
+    local = _local_path(path)
+    if local is None:
+        raise ValueError(f"manifest commits write local files, not {path!r}")
+    return local
+
+
 def read_manifest(spark: SparkSession, path: str) -> DataFrame | None:
-    if not os.path.isdir(path) or not any(
-        f.endswith(".parquet") for f in os.listdir(path)
+    local = _local_path(path)
+    if local is None:
+        try:
+            return spark.read.schema(MANIFEST_SCHEMA).parquet(path)
+        except AnalysisException as e:
+            if e.getCondition() == "PATH_NOT_FOUND":
+                return None
+            raise
+    if not os.path.isdir(local) or not any(
+        f.endswith(".parquet") for f in os.listdir(local)
     ):
         return None
     return spark.read.schema(MANIFEST_SCHEMA).parquet(path)
@@ -55,33 +81,39 @@ def done_partitions(spark: SparkSession, path: str) -> set[int]:
     parquet file per partition with pyarrow; read them back the same way —
     a Spark job (scan + collect) for O(partitions) driver-local files was
     pure scheduling overhead (~1 s per resumable run at local[32]). The
-    Spark read stays as the fallback for a manifest directory this process
-    didn't write (e.g. a future non-posix deployment swapping the commit
-    path for an Iceberg table)."""
-    if not os.path.isdir(path):
-        return set()
-    try:
-        out: set[int] = set()
-        for f in os.listdir(path):
-            if not f.endswith(".parquet") or f.startswith("._tmp"):
-                continue
-            t = pq.read_table(
-                os.path.join(path, f), columns=["part_id", "status"]
-            )
-            for pid, st in zip(
-                t.column("part_id").to_pylist(), t.column("status").to_pylist()
-            ):
-                if st == "done":
-                    out.add(pid)
-        return out
-    except (OSError, pa.ArrowInvalid):
-        m = read_manifest(spark, path)
-        if m is None:
+    Spark read is the path for a remote URI (a deployment swapping the
+    commit path for an object store or an Iceberg table) and the fallback
+    for a local file pyarrow cannot read as a manifest row (foreign
+    schema, corrupt file) — never a silent empty set that forces a full
+    recompute."""
+    local = _local_path(path)
+    if local is not None:
+        if not os.path.isdir(local):
             return set()
-        return {
-            r["part_id"]
-            for r in m.where("status = 'done'").select("part_id").collect()
-        }
+        try:
+            out: set[int] = set()
+            for f in os.listdir(local):
+                if not f.endswith(".parquet") or f.startswith("._tmp"):
+                    continue
+                t = pq.read_table(
+                    os.path.join(local, f), columns=["part_id", "status"]
+                )
+                for pid, st in zip(
+                    t.column("part_id").to_pylist(),
+                    t.column("status").to_pylist(),
+                ):
+                    if st == "done":
+                        out.add(pid)
+            return out
+        except (OSError, KeyError, pa.ArrowException):
+            pass
+    m = read_manifest(spark, path)
+    if m is None:
+        return set()
+    return {
+        r["part_id"]
+        for r in m.where("status = 'done'").select("part_id").collect()
+    }
 
 
 def commit_partition(
@@ -93,6 +125,7 @@ def commit_partition(
     attempt: int = 1,
 ) -> None:
     """Atomically record one finished partition."""
+    path = _local_dir(path)
     os.makedirs(path, exist_ok=True)
     now = datetime.now(timezone.utc)
     table = pa.Table.from_pylist(
@@ -121,6 +154,7 @@ def invalidate_partitions(path: str, part_ids: list[int]) -> None:
     finished run (snapshot diff said 'changed') so run_resumable picks them
     up again. Missing marks are fine — an 'added' partition never had one.
     Atomic per partition (unlink), same idempotence contract as commit."""
+    path = _local_dir(path)
     for p in part_ids:
         mark = os.path.join(path, f"part-{int(p):05d}.parquet")
         try:

@@ -397,9 +397,12 @@ def run_validation(
 def _partition_values(clips: DataFrame) -> set[int] | None:
     """part_id values of a hive-partitioned (``part_id=N`` directory) clip
     table, read from the scan's file list — DRIVER-side metadata the reader
-    has already listed, so resume discovery costs no Spark job. None when
-    any file is outside that layout (caller falls back to a distinct scan:
-    partition values then genuinely live in the data)."""
+    has already listed, so resume discovery costs no Spark job. The value
+    comes from each file's OWN directory (the last path segment): an
+    ancestor directory that happens to be named ``part_id=N`` must not
+    collapse every file onto N. None when any file is outside that layout
+    (caller falls back to a distinct scan: partition values then genuinely
+    live in the data)."""
     import re
 
     try:
@@ -410,7 +413,7 @@ def _partition_values(clips: DataFrame) -> set[int] | None:
         return None
     out: set[int] = set()
     for f in files:
-        m = re.search(r"[/\\]part_id=(-?\d+)[/\\]", f)
+        m = re.search(r"[/\\]part_id=(-?\d+)[/\\][^/\\]+$", f)
         if m is None:
             return None
         out.add(int(m.group(1)))

@@ -37,14 +37,15 @@ from pyspark.sql import SparkSession
 ARROW_BATCH_ROWS = int(os.environ.get("BASK_ARROW_BATCH_ROWS", "128"))
 
 
-def _default_driver_mem() -> str:
-    """Driver-JVM heap default scaled to the machine: ~1/8 of physical RAM,
-    clamped to [2g, 16g]. 16g is the right size for a 128 GiB local[32] box
-    (32 concurrent parquet writers + Arrow payload batches), but a fixed 16g
-    fails to launch the JVM on smaller hosts — override with
-    ``SPARK_DRIVER_MEM`` either way."""
+def _default_driver_mem(meminfo: str = "/proc/meminfo") -> str:
+    """Driver-JVM heap default scaled to the machine: ~1/2 of physical RAM,
+    clamped to [2g, 16g]. In local mode the driver IS the executor, so it
+    holds every task's parquet reader and Arrow payload batches — RAM/8
+    (2g on a 15 GiB host) OOMs in the vectorized reader on the first
+    100k-clip scan; a fixed 16g fails to launch the JVM on smaller hosts.
+    Override with ``SPARK_DRIVER_MEM`` either way."""
     try:
-        with open("/proc/meminfo") as f:
+        with open(meminfo) as f:
             for line in f:
                 if line.startswith("MemTotal:"):
                     total_gib = int(line.split()[1]) / (1024 * 1024)
@@ -53,7 +54,7 @@ def _default_driver_mem() -> str:
                 return "8g"
     except OSError:  # non-Linux / unreadable → conservative fixed default
         return "8g"
-    return f"{max(2, min(16, int(total_gib // 8)))}g"
+    return f"{max(2, min(16, int(total_gib // 2)))}g"
 
 
 def get_session(
@@ -94,11 +95,9 @@ def get_session(
         )
         .config("spark.sql.parquet.filterPushdown", "true")
         .config("spark.serializer", "org.apache.spark.serializer.KryoSerializer")
-        # local mode: the driver JVM IS the executor. 8g OOMs at local[32]
-        # with 3-second clips (32 concurrent parquet writers + Arrow batches
-        # of ~300KB payload rows); 16g holds with headroom on a 128 GiB box
-        # but would fail to LAUNCH on small hosts, so the default scales with
-        # the machine. On a real cluster memory comes from spark-submit.
+        # local mode: the driver JVM IS the executor, so the default heap
+        # scales with the machine (_default_driver_mem). On a real cluster
+        # memory comes from spark-submit.
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", _default_driver_mem()))
         .config("spark.ui.enabled", "false")
     )

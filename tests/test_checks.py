@@ -93,6 +93,70 @@ def test_approx_distinct_within_rsd(t1_clips):
     assert abs(st["approx_distinct"] - exact) / exact < 0.1
 
 
+def _typed_frame(spark):
+    """One column per type ``column_stats`` must sketch, with cardinalities
+    both below and well above the sketch's exact range."""
+    return spark.range(0, 6000).select(
+        (F.col("id") % 3).cast("int").alias("part_id"),
+        (F.col("id") % 1997 / 7).cast("double").alias("d"),
+        (F.col("id") % 501 / 3).cast("float").alias("f"),
+        (F.col("id") % 333).cast("decimal(10,2)").alias("dec"),
+        F.date_add(F.lit("2020-01-01").cast("date"), (F.col("id") % 400).cast("int")).alias("dt"),
+        F.timestamp_seconds(F.col("id") % 777).alias("ts"),
+        (F.col("id") % 2 == 0).alias("b"),
+        (F.col("id") % 90).cast("smallint").alias("sm"),
+        F.when(F.col("id") % 5 == 0, F.lit(-0.0)).otherwise(F.lit(0.0)).alias("z"),
+    )
+
+
+def test_approx_distinct_all_types_within_rsd(spark):
+    df = _typed_frame(spark)
+    cols = [c for c in df.columns if c != "part_id"]
+    got = {
+        (r["part_id"], r["column_name"]): r["approx_distinct"]
+        for r in column_stats(df, rsd=0.02).collect()
+    }
+    exact = df.groupBy("part_id").agg(
+        *[F.countDistinct(c).alias(c) for c in cols]
+    ).collect()
+    assert len(got) == 3 * len(cols)
+    for r in exact:
+        for c in cols:
+            est, n = got[(r["part_id"], c)], r[c]
+            assert abs(est - n) <= 0.02 * n, (r["part_id"], c, est, n)
+            if n < 100:  # sketch is exact at low cardinality
+                assert est == n, (r["part_id"], c, est, n)
+
+
+def test_column_stats_and_stats_state_share_one_sketch(spark):
+    """rsd 0.02 maps to lg_k 12, so column_stats and stats_state build the
+    same DataSketches HLL and report identical estimates per partition."""
+    from baskerville_spark.checks import stats_state as SS
+
+    assert SS.lg_k_for_rsd(0.02) == 12
+    df = _typed_frame(spark)
+    cols = ["d", "dec", "ts", "sm"]
+    cs = {
+        (r["part_id"], r["column_name"]): r["approx_distinct"]
+        for r in column_stats(df, numeric_cols=[], other_cols=cols, rsd=0.02).collect()
+    }
+    ss = SS.finalize_stats(
+        SS.stats_state(df, ["part_id"], [], cols, lg_k=12), cols
+    ).collect()
+    assert len(ss) == 3
+    for r in ss:
+        for c in cols:
+            assert cs[(r["part_id"], c)] == r[f"{c}_distinct_est"], (r["part_id"], c)
+
+
+def test_column_stats_plan_has_no_hll_plus_plus(t1_clips):
+    st = column_stats(t1_clips, numeric_cols=["sr_hz", "dur_ms"], other_cols=["codec"])
+    st.collect()
+    plan = st._jdf.queryExecution().executedPlan().toString()
+    assert "approx_count_distinct" not in plan.lower(), plan[:2000]
+    assert "hll_sketch_agg" in plan, plan[:2000]
+
+
 def test_schema_enforcement(spark):
     specs = [
         ColumnSpec("a", "string", required=True, default="dflt"),

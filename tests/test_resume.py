@@ -92,6 +92,69 @@ def test_recommit_overwrites(tmp_path, spark):
     assert len(rows) == 1 and rows[0]["attempt"] == 2
 
 
+def test_ancestor_dir_named_part_id_is_not_a_partition(spark, tmp_path):
+    """Partition discovery reads each file's own ``part_id=N`` directory:
+    a table stored under an ancestor directory that happens to be named
+    ``part_id=9`` must still validate and commit its own partitions."""
+    root = tmp_path / "part_id=9"
+    clips_p, tref_p, man_p, out_p = _paths(root)
+    write_clips(spark, clips_p, CFG)
+    write_transcript_ref(spark, tref_p, CFG)
+    processed = run_resumable(
+        spark, clips_p, man_p, out_p, tref_p, cfg=ValidationConfig(check_audio=False)
+    )
+    assert processed == [0, 1, 2, 3]
+    assert done_partitions(spark, man_p) == {0, 1, 2, 3}
+    n_rows = spark.read.parquet(man_p).groupBy().sum("n_rows").collect()[0][0]
+    assert n_rows == CFG.n_rows
+
+
+def test_done_partitions_file_uri(spark, tmp_path):
+    man_p = tmp_path / "m"
+    now = datetime.now(timezone.utc)
+    commit_partition(f"file://{man_p}", 3, 10, 0, now)
+    commit_partition(str(man_p), 5, 10, 0, now)
+    assert done_partitions(spark, f"file://{man_p}") == {3, 5}
+    assert done_partitions(spark, str(man_p)) == {3, 5}
+
+
+def test_done_partitions_foreign_schema_falls_back_to_spark(spark, tmp_path):
+    """A parquet file pyarrow cannot read as a manifest row (no ``status``
+    column) sends the read to Spark, which still returns the done-marks of
+    the well-formed files instead of crashing or returning nothing."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    man_p = tmp_path / "m"
+    now = datetime.now(timezone.utc)
+    commit_partition(str(man_p), 0, 10, 0, now)
+    commit_partition(str(man_p), 2, 10, 0, now)
+    pq.write_table(
+        pa.table({"part_id": pa.array([1], pa.int32()), "state": ["done"]}),
+        str(man_p / "foreign.parquet"),
+    )
+    assert done_partitions(spark, str(man_p)) == {0, 2}
+
+
+def test_done_partitions_remote_uri_reads_with_spark(spark, monkeypatch):
+    """A non-local URI goes to the Spark read; it never short-circuits to
+    an empty set (which would force a full recompute)."""
+    from baskerville_spark.runtime import manifest as M
+    from baskerville_spark.schema import MANIFEST_SCHEMA
+
+    rows = [(4, "done", 1, 10, 0, None, None, "x"),
+            (6, "failed", 1, 10, 0, None, None, "x")]
+    seen = []
+
+    def fake_read(spark_, path):
+        seen.append(path)
+        return spark_.createDataFrame(rows, MANIFEST_SCHEMA)
+
+    monkeypatch.setattr(M, "read_manifest", fake_read)
+    assert M.done_partitions(spark, "s3a://bucket/manifest") == {4}
+    assert seen == ["s3a://bucket/manifest"]
+
+
 def test_route_quarantine_partitions_input(spark):
     from pyspark.sql import Row
 

@@ -121,3 +121,20 @@ def test_verdicts_invariant_to_parallelism(spark, t1_clips, t1_tref):
     a = grid(t1_clips.repartition(3), 4)
     b = grid(t1_clips.repartition(17), 32)
     assert a == b and len(a) > 0
+
+
+def test_default_driver_mem_is_half_of_ram(tmp_path):
+    """Local mode runs every task inside the driver JVM, so the default heap
+    is about RAM/2, clamped to [2g, 16g]."""
+    from baskerville_spark.session import _default_driver_mem
+
+    def mem(kib: int) -> str:
+        p = tmp_path / "meminfo"
+        p.write_text(f"MemTotal:       {kib} kB\nMemFree:  1 kB\n")
+        return _default_driver_mem(str(p))
+
+    gib = 1024 * 1024
+    assert mem(15 * gib + gib // 2) == "7g"
+    assert mem(2 * gib) == "2g"
+    assert mem(128 * gib) == "16g"
+    assert _default_driver_mem(str(tmp_path / "missing")) == "8g"
