@@ -173,32 +173,20 @@ def invariant_violations(results: DataFrame) -> DataFrame:
     explode so the (expensive) upstream decode plan is traversed once, not
     once per violation kind.
     """
-    snr_struct = F.when(
-        ~F.col("snr_ok"),
-        F.struct(
-            F.when(F.col("decode_ok"), F.lit("snr"))
-            .otherwise(F.lit("decode_error"))
-            .alias("check_name"),
-            F.concat(
-                F.lit("snr_db="),
-                F.coalesce(F.round("snr_db", 2).cast("string"), F.lit("nan")),
-            ).alias("detail"),
-        ),
+    snr_struct = (
+        "CASE WHEN NOT snr_ok THEN named_struct("
+        "'check_name', CASE WHEN decode_ok THEN 'snr' ELSE 'decode_error' END,"
+        " 'detail', concat('snr_db=', coalesce(CAST(round(snr_db, 2) AS STRING), 'nan'))"
+        ") END"
     )
-    tr_struct = F.when(
-        F.col("transcript_ok") == False,  # noqa: E712
-        F.struct(
-            F.lit("transcript_eq").alias("check_name"),
-            F.lit("transcript != transcript_ref").alias("detail"),
-        ),
+    tr_struct = (
+        "CASE WHEN transcript_ok = FALSE THEN named_struct("
+        "'check_name', 'transcript_eq', 'detail', 'transcript != transcript_ref'"
+        ") END"
     )
-    return (
-        results.select(
-            "part_id",
-            "clip_id",
-            F.explode(
-                F.filter(F.array(snr_struct, tr_struct), lambda x: x.isNotNull())
-            ).alias("v"),
-        )
-        .select("part_id", "clip_id", "v.check_name", "v.detail")
-    )
+    # SQL text: one py4j call where Column algebra took dozens (checks/sqltext)
+    return results.selectExpr(
+        "part_id",
+        "clip_id",
+        f"explode(filter(array({snr_struct}, {tr_struct}), x -> x IS NOT NULL)) AS v",
+    ).select("part_id", "clip_id", "v.check_name", "v.detail")

@@ -12,7 +12,7 @@ Reference parity (src/baskerville/models/log_parsers.py):
   this gap; here patterns ARE enforced, as native ``rlike`` predicates
   producing violation rows.
 
-Everything is Column algebra — no UDFs, fully pushdown/codegen friendly.
+Everything is native expressions — no UDFs, fully pushdown/codegen friendly.
 """
 
 from __future__ import annotations
@@ -22,6 +22,8 @@ from typing import Any
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from baskerville_spark.checks import sqltext
 
 
 @dataclass(frozen=True)
@@ -82,26 +84,20 @@ def pattern_violations(
     for s in specs:
         if s.pattern is None or s.name not in df.columns:
             continue
-        violates = (
-            F.col(s.name).isNotNull() & ~F.col(s.name).cast("string").rlike(s.pattern)
-        )
+        c = sqltext.ident(s.name)
+        v = f"CAST({c} AS STRING)"
         pieces.append(
-            F.when(
-                violates,
-                F.struct(
-                    F.lit(f"pattern:{s.name}").alias("check_name"),
-                    F.concat(
-                        F.lit("value="), F.col(s.name).cast("string")
-                    ).alias("detail"),
-                ),
-            )
+            f"CASE WHEN {c} IS NOT NULL AND NOT {v} RLIKE {sqltext.lit(s.pattern)}"
+            f" THEN named_struct('check_name', {sqltext.lit(f'pattern:{s.name}')},"
+            f" 'detail', concat('value=', {v})) END"
         )
     if not pieces:
         return None
-    return df.select(
-        F.col(part_col).cast("int").alias("part_id"),
-        F.col(key).alias("clip_id"),
-        F.explode(F.array_compact(F.array(*pieces))).alias("__v"),
+    # SQL text: one py4j call where Column algebra took dozens (checks/sqltext)
+    return df.selectExpr(
+        f"CAST({sqltext.ident(part_col)} AS INT) AS part_id",
+        f"{sqltext.ident(key)} AS clip_id",
+        f"explode(array_compact(array({', '.join(pieces)}))) AS __v",
     ).select("part_id", "clip_id", "__v.*")
 
 

@@ -35,8 +35,11 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from baskerville_spark.checks import sqltext
+
 __all__ = [
     "sketchable",
+    "sketchable_sql",
     "lg_k_for_rsd",
     "stats_state",
     "merge_stats_states",
@@ -58,29 +61,34 @@ def lg_k_for_rsd(rsd: float) -> int:
     return max(4, min(21, math.ceil(2 * math.log2(1.04 / rsd))))
 
 
-def sketchable(df: DataFrame, name: str) -> Column:
-    """``df[name]`` in a type ``hll_sketch_agg`` accepts (INT, BIGINT,
-    STRING, BINARY), mapped injectively so distinct values stay distinct:
-    native types pass through uncast (no per-row cast on the hot path);
-    small integrals, booleans, dates and timestamps widen losslessly to
-    int/bigint; floating and decimal values use their string form (±0.0
+def sketchable_sql(df: DataFrame, name: str) -> str:
+    """``df[name]`` as SQL text in a type ``hll_sketch_agg`` accepts (INT,
+    BIGINT, STRING, BINARY), mapped injectively so distinct values stay
+    distinct: native types pass through uncast (no per-row cast on the hot
+    path); small integrals, booleans, dates and timestamps widen losslessly
+    to int/bigint; floating and decimal values use their string form (±0.0
     folded to 0.0, as SQL equality has it); anything else is hashed."""
-    c = F.col(name)
+    c = sqltext.ident(name)
     t = df.schema[name].dataType
     if isinstance(t, (T.IntegerType, T.LongType, T.StringType, T.BinaryType)):
         return c
     if isinstance(t, (T.ByteType, T.ShortType, T.BooleanType)):
-        return c.cast("int")
+        return f"CAST({c} AS INT)"
     if isinstance(t, T.DateType):
-        return F.unix_date(c)
+        return f"unix_date({c})"
     if isinstance(t, T.TimestampType):
-        return F.unix_micros(c)
+        return f"unix_micros({c})"
     if isinstance(t, (T.FloatType, T.DoubleType)):
-        x = c.cast("double")
-        return F.when(x == 0, F.lit(0.0)).otherwise(x).cast("string")
+        x = f"CAST({c} AS DOUBLE)"
+        return f"CAST(CASE WHEN {x} = 0 THEN 0.0D ELSE {x} END AS STRING)"
     if isinstance(t, T.DecimalType):
-        return c.cast("string")
-    return F.xxhash64(c)
+        return f"CAST({c} AS STRING)"
+    return f"xxhash64({c})"
+
+
+def sketchable(df: DataFrame, name: str) -> Column:
+    """:func:`sketchable_sql` as a Column."""
+    return F.expr(sketchable_sql(df, name))
 
 
 def stats_state(

@@ -21,6 +21,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from baskerville_spark.checks import sqltext
+
 
 def duplicate_keys(
     df: DataFrame,
@@ -200,11 +202,12 @@ def uniqueness_violations(
 ) -> DataFrame:
     """Violation rows (VIOLATION_SCHEMA shape) for duplicated clip_ids."""
     dups = duplicate_keys(df, key, part_col, n_salt)
-    return dups.select(
-        F.col(part_col).cast("int").alias("part_id"),
-        F.col(key).alias("clip_id"),
-        F.lit("uniqueness").alias("check_name"),
-        F.concat(F.lit("dup_count="), F.col("dup_count").cast("string")).alias("detail"),
+    # SQL text: one py4j call where Column algebra took dozens (checks/sqltext)
+    return dups.selectExpr(
+        f"CAST({sqltext.ident(part_col)} AS INT) AS part_id",
+        f"{sqltext.ident(key)} AS clip_id",
+        "'uniqueness' AS check_name",
+        "concat('dup_count=', CAST(dup_count AS STRING)) AS detail",
     )
 
 

@@ -137,17 +137,15 @@ def _violation_verdicts(
     )
     return (
         grid.join(counts, ["part_id", "check_name"], "left")
-        .select(
-            F.col("part_id").cast("int").alias("part_id"),
+        .selectExpr(
+            "CAST(part_id AS INT) AS part_id",
             "check_name",
-            (F.coalesce(F.col("n_violations"), F.lit(0)) == 0).alias("passed"),
-            (
-                F.coalesce(F.col("n_violations"), F.lit(0))
-                / F.greatest(F.col("n_rows"), F.lit(1))
-            ).cast("double").alias("metric_value"),
-            F.lit(0.0).alias("threshold"),
-            F.col("n_rows").cast("long").alias("n_rows"),
-            F.coalesce(F.col("n_violations"), F.lit(0)).cast("long").alias("n_violations"),
+            "coalesce(n_violations, 0) = 0 AS passed",
+            "CAST(coalesce(n_violations, 0) / greatest(n_rows, 1) AS DOUBLE)"
+            " AS metric_value",
+            "0.0D AS threshold",
+            "CAST(n_rows AS BIGINT) AS n_rows",
+            "CAST(coalesce(n_violations, 0) AS BIGINT) AS n_violations",
         )
     )
 
@@ -425,12 +423,12 @@ def _delete_pending_sink_dirs(
 ) -> None:
     """Remove ``{out_dir}/{sink}/part_id={p}`` for every pending partition
     via the Hadoop FileSystem API (portable across file/hdfs/s3a schemes)."""
-    jvm = spark.sparkContext._jvm
+    Path = spark.sparkContext._jvm.org.apache.hadoop.fs.Path
     hconf = spark.sparkContext._jsc.hadoopConfiguration()
+    fs = Path(out_dir).getFileSystem(hconf)  # one lookup: every sink shares it
     for sink in sink_names:
         for p in pending:
-            path = jvm.org.apache.hadoop.fs.Path(f"{out_dir}/{sink}/part_id={int(p)}")
-            fs = path.getFileSystem(hconf)
+            path = Path(f"{out_dir}/{sink}/part_id={int(p)}")
             if fs.exists(path):
                 fs.delete(path, True)
 

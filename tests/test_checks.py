@@ -9,6 +9,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 import pytest
 
+from baskerville_spark.checks import sqltext
 from baskerville_spark.checks.referential import ref_integrity_violations
 from baskerville_spark.checks.schema_check import (
     ColumnSpec,
@@ -181,6 +182,37 @@ def test_schema_enforcement(spark):
     )
     bad = {r["detail"] for r in pv.collect()}
     assert bad == {"value=999", "value=abc"}
+
+
+def test_sqltext_literals_type_like_f_lit(spark):
+    """``sqltext.lit`` gives each Python scalar the value and type ``F.lit``
+    does, including the int32 edges and non-finite floats, and ``ident``
+    keeps spaces, dots and backquotes inside one column name."""
+    vals = [0, -5, 2**31 - 1, -(2**31), 2**31, -(2**40), 0.05, -0.0, 1e-05,
+            1e300, float("inf"), float("-inf"), "it's a \\d+ 'x'"]
+    got = spark.range(1).selectExpr(
+        *[f"{sqltext.lit(v)} AS c{i}" for i, v in enumerate(vals)]
+    )
+    want = spark.range(1).select(*[F.lit(v).alias(f"c{i}") for i, v in enumerate(vals)])
+    assert got.dtypes == want.dtypes
+    assert got.collect() == want.collect()
+    nan = spark.range(1).selectExpr(f"isnan({sqltext.lit(float('nan'))}) AS n").first()
+    assert nan["n"] is True
+
+    df = spark.createDataFrame([(1, 2, 3)], "`a b` int, `x.y` int, `q``t` int")
+    sums = df.selectExpr(*[f"{sqltext.ident(c)} + 0 AS s{i}" for i, c in enumerate(df.columns)])
+    assert tuple(sums.first()) == (1, 2, 3)
+
+
+def test_pattern_violations_regex_escapes(spark):
+    """Patterns reach RLIKE verbatim: backslash classes and quotes survive
+    the SQL-text rendering."""
+    df = spark.createDataFrame(
+        [(0, "k1", "ab12"), (0, "k2", "ab"), (1, "k3", "it's"), (1, "k4", None)],
+        "part_id int, clip_id string, v string",
+    )
+    pv = pattern_violations(df, [ColumnSpec("v", pattern=r"^(ab\d+|it's)$")])
+    assert {(r["clip_id"], r["detail"]) for r in pv.collect()} == {("k2", "value=ab")}
 
 
 def test_stats_single_shuffle_plan(t1_clips):
