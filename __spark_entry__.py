@@ -3,9 +3,9 @@
 Each ``queries()`` entry is an operator family from SURVEY.md §2 implemented
 Spark-first (baskerville_spark package), with a DuckDB oracle in
 ``oracle_sql()`` computing the identical result (same column names, floats
-rounded identically on both sides). Rows-only entries (no oracle) are the
-genuinely non-SQL-expressible ops: xxhash64-based sketches and the audio
-validation suite.
+rounded identically on both sides). Every gate has an oracle: the ``_GATES``
+table at the end of this module holds one (callable, oracle) row per gate,
+in driver order.
 """
 
 from __future__ import annotations
@@ -78,7 +78,7 @@ def _stream_shuffle(spark: SparkSession):
     return _cm()
 
 
-_CLIP_FIXTURES: dict[tuple, str] = {}
+_CLIP_FIXTURES: dict = {}  # frozen GenConfig -> fixture root
 
 
 def _shared_clip_fixture(spark: SparkSession, cfg) -> tuple[str, str]:
@@ -94,7 +94,8 @@ def _shared_clip_fixture(spark: SparkSession, cfg) -> tuple[str, str]:
     fixture lives in a process-private temp dir removed at exit — nothing
     persists across bench or driver runs. Clips and the transcript dim
     generate CONCURRENTLY (independent jobs back-fill each other's task
-    tails, guide §2.6).
+    tails, guide §2.6). The cache is keyed on the frozen GenConfig itself,
+    so every field that shapes the generated output is part of the key.
     """
     import atexit
     import shutil
@@ -103,11 +104,7 @@ def _shared_clip_fixture(spark: SparkSession, cfg) -> tuple[str, str]:
 
     from baskerville_spark.generator import write_clips, write_transcript_ref
 
-    key = (
-        cfg.n_rows, cfg.n_parts, cfg.dur_min_ms, cfg.dur_max_ms,
-        cfg.dur_range_max_ms,
-    )
-    root = _CLIP_FIXTURES.get(key)
+    root = _CLIP_FIXTURES.get(cfg)
     if root is None:
         root = tempfile.mkdtemp(prefix="bsk_fixture_")
         with ThreadPoolExecutor(2) as ex:
@@ -115,7 +112,7 @@ def _shared_clip_fixture(spark: SparkSession, cfg) -> tuple[str, str]:
             ft = ex.submit(write_transcript_ref, spark, f"{root}/tref", cfg)
             fc.result()
             ft.result()
-        _CLIP_FIXTURES[key] = root
+        _CLIP_FIXTURES[cfg] = root
         atexit.register(shutil.rmtree, root, ignore_errors=True)
     return f"{root}/clips", f"{root}/tref"
 
@@ -650,7 +647,7 @@ LIMIT 10
 
 
 # ---------------------------------------------------------------------------
-# Q19-Q21, Q23 — rows-only ops (non-SQL-expressible or engine-specific)
+# Q19-Q21, Q23 — MinHash/SimHash sketches, clip validation, streaming windows
 # ---------------------------------------------------------------------------
 
 def q19_minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -906,62 +903,6 @@ def entry(spark: SparkSession) -> DataFrame:
     return q01_request_sets(spark, "/root/testdata/sf0.001")
 
 
-def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    return {
-        "q01_request_sets": q01_request_sets,
-        "q02_request_intervals": q02_request_intervals,
-        "q03_top_event_per_user": q03_top_event_per_user,
-        "q04_pivot_event_counts": q04_pivot_event_counts,
-        "q05_customers_without_orders": q05_customers_without_orders,
-        "q06_building_orders_semi": q06_building_orders_semi,
-        "q07_late_shipments": q07_late_shipments,
-        "q08_stats_profile": q08_stats_profile,
-        "q09_duplicate_custkeys": q09_duplicate_custkeys,
-        "q10_incident_detection": q10_incident_detection,
-        "q11_fingerprints": q11_fingerprints,
-        "q12_quality_features": q12_quality_features,
-        "q13_lang_id": q13_lang_id,
-        "q14_ann_topk": q14_ann_topk,
-        "q15_ngram_jaccard": q15_ngram_jaccard,
-        "q16_exact_dups": q16_exact_dups,
-        "q17_pricing_summary": q17_pricing_summary,
-        "q18_top_revenue_orders": q18_top_revenue_orders,
-        "q19_minhash_pairs": q19_minhash_pairs,
-        "q20_simhash": q20_simhash,
-        "q21_clip_validation": q21_clip_validation,
-        "q22_vector_pairs": q22_vector_pairs,
-        "q23_streaming_window_counts": q23_streaming_window_counts,
-    }
-
-
-def oracle_sql() -> dict[str, str]:
-    return {
-        "q01_request_sets": _Q01_SQL,
-        "q02_request_intervals": _Q02_SQL,
-        "q03_top_event_per_user": _Q03_SQL,
-        "q04_pivot_event_counts": _Q04_SQL,
-        "q05_customers_without_orders": _Q05_SQL,
-        "q06_building_orders_semi": _Q06_SQL,
-        "q07_late_shipments": _Q07_SQL,
-        "q08_stats_profile": _Q08_SQL,
-        "q09_duplicate_custkeys": _Q09_SQL,
-        "q10_incident_detection": _Q10_SQL,
-        "q11_fingerprints": _Q11_SQL,
-        "q12_quality_features": _Q12_SQL,
-        "q13_lang_id": _langid_sql(),
-        "q14_ann_topk": _Q14_SQL,
-        "q15_ngram_jaccard": _Q15_SQL,
-        "q16_exact_dups": _Q16_SQL,
-        "q17_pricing_summary": _Q17_SQL,
-        "q18_top_revenue_orders": _Q18_SQL,
-        "q19_minhash_pairs": _Q19_SQL,
-        "q21_clip_validation": _q21_sql(),
-        "q20_simhash": _q20_sql(),
-        "q22_vector_pairs": _Q22_SQL,
-        "q23_streaming_window_counts": _Q23_SQL,
-    }
-
-
 # ---------------------------------------------------------------------------
 # Q24-Q29 — sessionization, JSON, rollup, as-of join, sampling, state merge
 # ---------------------------------------------------------------------------
@@ -1159,46 +1100,6 @@ SELECT COALESCE(u.user_id, s.user_id) AS user_id,
        CASE WHEN u.user_id IS NOT NULL THEN u.updated_at ELSE s.updated_at END AS updated_at
 FROM s FULL OUTER JOIN u ON s.user_id = u.user_id
 """
-
-
-def _extra_queries():
-    return {
-        "q24_sessionization": q24_sessionization,
-        "q25_json_props": q25_json_props,
-        "q26_rollup_counts": q26_rollup_counts,
-        "q27_asof_prev_click": q27_asof_prev_click,
-        "q28_stratified_sample": q28_stratified_sample,
-        "q29_state_merge": q29_state_merge,
-    }
-
-
-def _extra_oracles():
-    return {
-        "q24_sessionization": _Q24_SQL,
-        "q25_json_props": _Q25_SQL,
-        "q26_rollup_counts": _Q26_SQL,
-        "q27_asof_prev_click": _Q27_SQL,
-        "q28_stratified_sample": _q28_sql(),
-        "q29_state_merge": _Q29_SQL,
-    }
-
-
-_base_queries = queries
-
-
-def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:  # noqa: F811
-    out = _base_queries()
-    out.update(_extra_queries())
-    return out
-
-
-_base_oracles = oracle_sql
-
-
-def oracle_sql() -> dict[str, str]:  # noqa: F811
-    out = _base_oracles()
-    out.update(_extra_oracles())
-    return out
 
 
 # ---------------------------------------------------------------------------
@@ -1926,54 +1827,6 @@ FROM events GROUP BY event_type
 """
 
 
-_prev_queries_q30 = queries
-
-
-def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:  # noqa: F811
-    out = _prev_queries_q30()
-    out["q30_cube_counts"] = q30_cube_counts
-    out["q31_heavy_both_types"] = q31_heavy_both_types
-    out["q32_srp_lsh_pairs"] = q32_srp_lsh_pairs
-    out["q33_first_last_touch"] = q33_first_last_touch
-    out["q34_map_features"] = q34_map_features
-    out["q35_simhash_near_dups"] = q35_simhash_near_dups
-    out["q36_session_window"] = q36_session_window
-    out["q37_geo_localize"] = q37_geo_localize
-    out["q38_ivf_topk"] = q38_ivf_topk
-    out["q39_streaming_dedup"] = q39_streaming_dedup
-    out["q40_image_features"] = q40_image_features
-    out["q41_video_frame_sample"] = q41_video_frame_sample
-    out["q42_dup_exemplars"] = q42_dup_exemplars
-    out["q43_first_last_agg"] = q43_first_last_agg
-    out["q44_drift_verdicts"] = q44_drift_verdicts
-    out["q45_streaming_kafka_shaped"] = q45_streaming_kafka_shaped
-    return out
-
-
-_prev_oracles_q30 = oracle_sql
-
-
-def oracle_sql() -> dict[str, str]:  # noqa: F811
-    out = _prev_oracles_q30()
-    out["q30_cube_counts"] = _Q30_SQL
-    out["q31_heavy_both_types"] = _Q31_SQL
-    out["q32_srp_lsh_pairs"] = _Q32_SQL
-    out["q33_first_last_touch"] = _Q33_SQL
-    out["q34_map_features"] = _Q34_SQL
-    out["q35_simhash_near_dups"] = _q35_sql()
-    out["q36_session_window"] = _Q36_SQL
-    out["q37_geo_localize"] = _Q37_SQL
-    out["q38_ivf_topk"] = _Q38_SQL  # exact top-k on the planted-cluster corpus
-    out["q39_streaming_dedup"] = _Q39_SQL
-    out["q40_image_features"] = _Q40_SQL
-    out["q41_video_frame_sample"] = _Q41_SQL
-    out["q42_dup_exemplars"] = _Q42_SQL
-    out["q43_first_last_agg"] = _Q33_SQL  # same semantics, single-shuffle plan
-    out["q44_drift_verdicts"] = _q44_sql()
-    out["q45_streaming_kafka_shaped"] = _Q45_SQL
-    return out
-
-
 # ---------------------------------------------------------------------------
 # Q46 — sketch-accuracy gate: the approximate aggregates (HLL distinct,
 #       KLL-style quantiles) graded against exact answers with their
@@ -2541,44 +2394,6 @@ SELECT vec_id, 1 AS predicted FROM embeddings WHERE vec_id % 40 = 0
 """
 
 
-_prev_queries_q46 = queries
-
-
-def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:  # noqa: F811
-    out = _prev_queries_q46()
-    out["q46_sketch_accuracy"] = q46_sketch_accuracy
-    out["q47_jdbc_segment_stats"] = q47_jdbc_segment_stats
-    out["q48_ref_integrity"] = q48_ref_integrity
-    out["q49_schema_enforce"] = q49_schema_enforce
-    out["q50_pattern_violations"] = q50_pattern_violations
-    out["q51_normalized_dups"] = q51_normalized_dups
-    out["q52_heavy_hitter_tokens"] = q52_heavy_hitter_tokens
-    out["q53_standard_scale"] = q53_standard_scale
-    out["q54_string_index"] = q54_string_index
-    out["q55_iforest_outliers"] = q55_iforest_outliers
-    out["q56_gbm_labeler"] = q56_gbm_labeler
-    return out
-
-
-_prev_oracles_q46 = oracle_sql
-
-
-def oracle_sql() -> dict[str, str]:  # noqa: F811
-    out = _prev_oracles_q46()
-    out["q46_sketch_accuracy"] = _q46_sql()
-    out["q47_jdbc_segment_stats"] = _Q47_SQL
-    out["q48_ref_integrity"] = _Q48_SQL
-    out["q49_schema_enforce"] = _Q49_SQL
-    out["q50_pattern_violations"] = _Q50_SQL
-    out["q51_normalized_dups"] = _Q51_SQL
-    out["q52_heavy_hitter_tokens"] = _Q52_SQL
-    out["q53_standard_scale"] = _Q53_SQL
-    out["q54_string_index"] = _Q54_SQL
-    out["q55_iforest_outliers"] = _Q55_SQL
-    out["q56_gbm_labeler"] = _Q56_SQL
-    return out
-
-
 # ---------------------------------------------------------------------------
 # Q57 — the COMPLETE reference feature vector in one funnel
 #       (GenerateFeatures: base_spark.py:445-458 composing the 39 feature
@@ -2844,26 +2659,6 @@ FROM cur c LEFT JOIN pst p ON c.user_id = p.user_id
 """
 
 
-_prev_queries_q57 = queries
-
-
-def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:  # noqa: F811
-    out = _prev_queries_q57()
-    out["q57_feature_vector"] = q57_feature_vector
-    out["q58_feature_update"] = q58_feature_update
-    return out
-
-
-_prev_oracles_q57 = oracle_sql
-
-
-def oracle_sql() -> dict[str, str]:  # noqa: F811
-    out = _prev_oracles_q57()
-    out["q57_feature_vector"] = _Q57_SQL
-    out["q58_feature_update"] = _Q58_SQL
-    return out
-
-
 # ---------------------------------------------------------------------------
 # Q59 — incident-aware anomaly thresholding (classify_anomalies,
 #       tasks.py:1771-1795; dual thresholds config.py:273-274)
@@ -2912,24 +2707,6 @@ SELECT user_id,
                  THEN 1 ELSE 0 END AS INTEGER) AS prediction
 FROM scored
 """
-
-
-_prev_queries_q59 = queries
-
-
-def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:  # noqa: F811
-    out = _prev_queries_q59()
-    out["q59_anomaly_thresholds"] = q59_anomaly_thresholds
-    return out
-
-
-_prev_oracles_q59 = oracle_sql
-
-
-def oracle_sql() -> dict[str, str]:  # noqa: F811
-    out = _prev_oracles_q59()
-    out["q59_anomaly_thresholds"] = _Q59_SQL
-    return out
 
 
 # ---------------------------------------------------------------------------
@@ -2997,24 +2774,6 @@ SELECT user_id, prediction, low_rate_attack,
 FROM verdicts
 WHERE (prediction = 1 OR low_rate_attack = 1) AND user_id % 13 <> 0
 """
-
-
-_prev_queries_q60 = queries
-
-
-def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:  # noqa: F811
-    out = _prev_queries_q60()
-    out["q60_challenge_commands"] = q60_challenge_commands
-    return out
-
-
-_prev_oracles_q60 = oracle_sql
-
-
-def oracle_sql() -> dict[str, str]:  # noqa: F811
-    out = _prev_oracles_q60()
-    out["q60_challenge_commands"] = _Q60_SQL
-    return out
 
 
 # ---------------------------------------------------------------------------
@@ -3114,25 +2873,6 @@ def q61_resume_verdicts(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("n_rows").cast("long").alias("n_rows"),
         F.col("n_violations").cast("long").alias("n_violations"),
     ), tmp)
-
-
-_prev_queries_q61 = queries
-
-
-def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:  # noqa: F811
-    out = _prev_queries_q61()
-    out["q61_resume_verdicts"] = q61_resume_verdicts
-    return out
-
-
-_prev_oracles_q61 = oracle_sql
-
-
-def oracle_sql() -> dict[str, str]:  # noqa: F811
-    out = _prev_oracles_q61()
-    # Same closed-form grid as q21: resume must reproduce the one-shot run.
-    out["q61_resume_verdicts"] = _q21_sql()
-    return out
 
 
 # ---------------------------------------------------------------------------
@@ -3242,24 +2982,6 @@ FROM events GROUP BY user_id
 """
 
 
-_prev_queries_q62 = queries
-
-
-def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:  # noqa: F811
-    out = _prev_queries_q62()
-    out["q62_feature_loop"] = q62_feature_loop
-    return out
-
-
-_prev_oracles_q62 = oracle_sql
-
-
-def oracle_sql() -> dict[str, str]:  # noqa: F811
-    out = _prev_oracles_q62()
-    out["q62_feature_loop"] = _Q62_SQL
-    return out
-
-
 # ---------------------------------------------------------------------------
 # Q63 — sensitive-data split / lagging re-merge (CacheSensitiveData →
 #       MergeWithSensitiveData, tasks.py:1291-1428)
@@ -3328,24 +3050,6 @@ SELECT event_id,
        user_id, props
 FROM events
 """
-
-
-_prev_queries_q63 = queries
-
-
-def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:  # noqa: F811
-    out = _prev_queries_q63()
-    out["q63_sensitive_roundtrip"] = q63_sensitive_roundtrip
-    return out
-
-
-_prev_oracles_q63 = oracle_sql
-
-
-def oracle_sql() -> dict[str, str]:  # noqa: F811
-    out = _prev_oracles_q63()
-    out["q63_sensitive_roundtrip"] = _Q63_SQL
-    return out
 
 
 # ---------------------------------------------------------------------------
@@ -3433,24 +3137,6 @@ SELECT CAST(user_id AS VARCHAR) AS key,
        CAST(ROUND(SUM(value), 4) AS REAL) AS value_sum
 FROM events GROUP BY user_id
 """
-
-
-_prev_queries_q64 = queries
-
-
-def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:  # noqa: F811
-    out = _prev_queries_q64()
-    out["q64_stateful_stream_stats"] = q64_stateful_stream_stats
-    return out
-
-
-_prev_oracles_q64 = oracle_sql
-
-
-def oracle_sql() -> dict[str, str]:  # noqa: F811
-    out = _prev_oracles_q64()
-    out["q64_stateful_stream_stats"] = _Q64_SQL
-    return out
 
 
 # ---------------------------------------------------------------------------
@@ -3635,26 +3321,6 @@ GROUP BY 1, 2
 """
 
 
-_prev_queries_q66 = queries
-
-
-def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:  # noqa: F811
-    out = _prev_queries_q66()
-    out["q65_dedup_clusters"] = q65_dedup_clusters
-    out["q66_sliding_window_counts"] = q66_sliding_window_counts
-    return out
-
-
-_prev_oracles_q66 = oracle_sql
-
-
-def oracle_sql() -> dict[str, str]:  # noqa: F811
-    out = _prev_oracles_q66()
-    out["q65_dedup_clusters"] = _Q65_SQL
-    out["q66_sliding_window_counts"] = _Q66_SQL
-    return out
-
-
 # ---------------------------------------------------------------------------
 # Q67 — adversarial-diameter dedup clustering: large-star/small-star CC
 #       (functions/graph.py connected_components_bigstar) on chain graphs
@@ -3706,24 +3372,6 @@ SELECT doc_id,
        doc_id = MIN(doc_id) OVER (PARTITION BY g, isl) AS is_canonical
 FROM i
 """
-
-
-_prev_queries_q67 = queries
-
-
-def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:  # noqa: F811
-    out = _prev_queries_q67()
-    out["q67_chain_clusters_bigstar"] = q67_chain_clusters_bigstar
-    return out
-
-
-_prev_oracles_q67 = oracle_sql
-
-
-def oracle_sql() -> dict[str, str]:  # noqa: F811
-    out = _prev_oracles_q67()
-    out["q67_chain_clusters_bigstar"] = _Q67_SQL
-    return out
 
 
 # ---------------------------------------------------------------------------
@@ -3787,24 +3435,6 @@ def q68_incremental_chain_clusters(spark: SparkSession, sf_dir: str) -> DataFram
     ).select(
         F.col("id").alias("doc_id"), "cluster_id", "cluster_size", "is_canonical"
     )
-
-
-_prev_queries_q68 = queries
-
-
-def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:  # noqa: F811
-    out = _prev_queries_q68()
-    out["q68_incremental_chain_clusters"] = q68_incremental_chain_clusters
-    return out
-
-
-_prev_oracles_q68 = oracle_sql
-
-
-def oracle_sql() -> dict[str, str]:  # noqa: F811
-    out = _prev_oracles_q68()
-    out["q68_incremental_chain_clusters"] = _Q67_SQL
-    return out
 
 
 # ---------------------------------------------------------------------------
@@ -3893,24 +3523,6 @@ WHERE ROUND(dot / (na * nb), 4) >= 0.3
 """
 
 
-_prev_queries_q69 = queries
-
-
-def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:  # noqa: F811
-    out = _prev_queries_q69()
-    out["q69_tfidf_cosine_pairs"] = q69_tfidf_cosine_pairs
-    return out
-
-
-_prev_oracles_q69 = oracle_sql
-
-
-def oracle_sql() -> dict[str, str]:  # noqa: F811
-    out = _prev_oracles_q69()
-    out["q69_tfidf_cosine_pairs"] = _Q69_SQL
-    return out
-
-
 # ---------------------------------------------------------------------------
 # Q70 — asymmetric containment dedup (doc ⊇ excerpt):
 #       functions/dedup.shingle_containment_pairs
@@ -3972,24 +3584,6 @@ JOIN sizes sa ON sa.doc_id = id_a
 JOIN sizes sb ON sb.doc_id = id_b
 WHERE c * 1.0 / sa.n >= 0.8 OR c * 1.0 / sb.n >= 0.8
 """
-
-
-_prev_queries_q70 = queries
-
-
-def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:  # noqa: F811
-    out = _prev_queries_q70()
-    out["q70_containment_pairs"] = q70_containment_pairs
-    return out
-
-
-_prev_oracles_q70 = oracle_sql
-
-
-def oracle_sql() -> dict[str, str]:  # noqa: F811
-    out = _prev_oracles_q70()
-    out["q70_containment_pairs"] = _Q70_SQL
-    return out
 
 
 # ---------------------------------------------------------------------------
@@ -4070,24 +3664,6 @@ FROM ratios r JOIN topg t ON r.doc_id = t.doc_id
 """
 
 
-_prev_queries_q71 = queries
-
-
-def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:  # noqa: F811
-    out = _prev_queries_q71()
-    out["q71_repetition_metrics"] = q71_repetition_metrics
-    return out
-
-
-_prev_oracles_q71 = oracle_sql
-
-
-def oracle_sql() -> dict[str, str]:  # noqa: F811
-    out = _prev_oracles_q71()
-    out["q71_repetition_metrics"] = _Q71_SQL
-    return out
-
-
 # ---------------------------------------------------------------------------
 # Q72 — per-document character entropy (functions/text.char_entropy)
 # ---------------------------------------------------------------------------
@@ -4133,24 +3709,6 @@ SELECT ids.id AS doc_id,
        CAST(ROUND(coalesce(ent.entropy, 0.0), 4) AS REAL) AS entropy
 FROM ids LEFT JOIN ent USING (id)
 """
-
-
-_prev_queries_q72 = queries
-
-
-def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:  # noqa: F811
-    out = _prev_queries_q72()
-    out["q72_char_entropy"] = q72_char_entropy
-    return out
-
-
-_prev_oracles_q72 = oracle_sql
-
-
-def oracle_sql() -> dict[str, str]:  # noqa: F811
-    out = _prev_oracles_q72()
-    out["q72_char_entropy"] = _Q72_SQL
-    return out
 
 
 # ---------------------------------------------------------------------------
@@ -4224,24 +3782,6 @@ SELECT doc_id,
              phone, '<PHONE>', 'g')) AS scrubbed_md5
 FROM (SELECT doc_id, coalesce(text, '') AS t FROM corpus), pat
 """
-
-
-_prev_queries_q73 = queries
-
-
-def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:  # noqa: F811
-    out = _prev_queries_q73()
-    out["q73_pii_scrub"] = q73_pii_scrub
-    return out
-
-
-_prev_oracles_q73 = oracle_sql
-
-
-def oracle_sql() -> dict[str, str]:  # noqa: F811
-    out = _prev_oracles_q73()
-    out["q73_pii_scrub"] = _Q73_SQL
-    return out
 
 
 # --------------------------------------------------------------------------
@@ -4432,30 +3972,6 @@ FROM c GROUP BY 1
 """
 
 
-_prev_queries_q77 = queries
-
-
-def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:  # noqa: F811
-    out = _prev_queries_q77()
-    out["q74_payload_bytes"] = q74_payload_bytes
-    out["q75_speaking_rate"] = q75_speaking_rate
-    out["q76_decontamination"] = q76_decontamination
-    out["q77_sequence_packing"] = q77_sequence_packing
-    return out
-
-
-_prev_oracles_q77 = oracle_sql
-
-
-def oracle_sql() -> dict[str, str]:  # noqa: F811
-    out = _prev_oracles_q77()
-    out["q74_payload_bytes"] = _Q74_SQL
-    out["q75_speaking_rate"] = _Q75_SQL
-    out["q76_decontamination"] = _Q76_SQL
-    out["q77_sequence_packing"] = _Q77_SQL
-    return out
-
-
 # --------------------------------------------------------------------------
 # q78: domain-mixture rebalancing sample
 # --------------------------------------------------------------------------
@@ -4493,24 +4009,6 @@ FROM documents d JOIN thr USING (source)
 WHERE ('0x' || substr(md5(CAST(d.doc_id AS VARCHAR)), 1, 15))::BIGINT % 1000000
       < thr.thr
 """
-
-
-_prev_queries_q78 = queries
-
-
-def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:  # noqa: F811
-    out = _prev_queries_q78()
-    out["q78_mixture_sample"] = q78_mixture_sample
-    return out
-
-
-_prev_oracles_q78 = oracle_sql
-
-
-def oracle_sql() -> dict[str, str]:  # noqa: F811
-    out = _prev_oracles_q78()
-    out["q78_mixture_sample"] = _q78_sql()
-    return out
 
 
 # --------------------------------------------------------------------------
@@ -4579,26 +4077,6 @@ GROUP BY t.doc_id
 """
 
 
-_prev_queries_q80 = queries
-
-
-def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:  # noqa: F811
-    out = _prev_queries_q80()
-    out["q79_chunk_documents"] = q79_chunk_documents
-    out["q80_vocab_oov"] = q80_vocab_oov
-    return out
-
-
-_prev_oracles_q80 = oracle_sql
-
-
-def oracle_sql() -> dict[str, str]:  # noqa: F811
-    out = _prev_oracles_q80()
-    out["q79_chunk_documents"] = _Q79_SQL
-    out["q80_vocab_oov"] = _Q80_SQL
-    return out
-
-
 # --------------------------------------------------------------------------
 # q81: robust (median/MAD) outlier flagging
 # --------------------------------------------------------------------------
@@ -4632,24 +4110,6 @@ SELECT d.event_type, d.event_id, d.x AS value,
 FROM d JOIN md USING (event_type)
 WHERE abs(d.x - d.med) > 5.0 * 1.4826 * greatest(md.mad, 1e-12)
 """
-
-
-_prev_queries_q81 = queries
-
-
-def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:  # noqa: F811
-    out = _prev_queries_q81()
-    out["q81_robust_outliers"] = q81_robust_outliers
-    return out
-
-
-_prev_oracles_q81 = oracle_sql
-
-
-def oracle_sql() -> dict[str, str]:  # noqa: F811
-    out = _prev_oracles_q81()
-    out["q81_robust_outliers"] = _Q81_SQL
-    return out
 
 
 # --------------------------------------------------------------------------
@@ -4710,24 +4170,6 @@ SELECT printf('clip_%012d', s) AS clip_id_a,
 FROM fl
 WHERE s % 17 = 5 AND NOT dup_renamed AND NOT mp3
 """
-
-
-_prev_queries_q82 = queries
-
-
-def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:  # noqa: F811
-    out = _prev_queries_q82()
-    out["q82_audio_content_dedup"] = q82_audio_content_dedup
-    return out
-
-
-_prev_oracles_q82 = oracle_sql
-
-
-def oracle_sql() -> dict[str, str]:  # noqa: F811
-    out = _prev_oracles_q82()
-    out["q82_audio_content_dedup"] = _Q82_SQL
-    return out
 
 
 # --------------------------------------------------------------------------
@@ -4798,24 +4240,6 @@ FROM idx
 """
 
 
-_prev_queries_q83 = queries
-
-
-def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:  # noqa: F811
-    out = _prev_queries_q83()
-    out["q83_loudness_stats"] = q83_loudness_stats
-    return out
-
-
-_prev_oracles_q83 = oracle_sql
-
-
-def oracle_sql() -> dict[str, str]:  # noqa: F811
-    out = _prev_oracles_q83()
-    out["q83_loudness_stats"] = _Q83_SQL
-    return out
-
-
 # --------------------------------------------------------------------------
 # q84: spectral features vs exact-bin sines
 # --------------------------------------------------------------------------
@@ -4882,24 +4306,6 @@ SELECT printf('sine_%06d', i) AS clip_id,
        TRUE AS ok_centroid
 FROM idx
 """
-
-
-_prev_queries_q84 = queries
-
-
-def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:  # noqa: F811
-    out = _prev_queries_q84()
-    out["q84_spectral_features"] = q84_spectral_features
-    return out
-
-
-_prev_oracles_q84 = oracle_sql
-
-
-def oracle_sql() -> dict[str, str]:  # noqa: F811
-    out = _prev_oracles_q84()
-    out["q84_spectral_features"] = _Q84_SQL
-    return out
 
 
 # --------------------------------------------------------------------------
@@ -4974,24 +4380,6 @@ FROM idx
 """
 
 
-_prev_queries_q85 = queries
-
-
-def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:  # noqa: F811
-    out = _prev_queries_q85()
-    out["q85_resample"] = q85_resample
-    return out
-
-
-_prev_oracles_q85 = oracle_sql
-
-
-def oracle_sql() -> dict[str, str]:  # noqa: F811
-    out = _prev_oracles_q85()
-    out["q85_resample"] = _Q85_SQL
-    return out
-
-
 # --------------------------------------------------------------------------
 # q86: batched top-k retrieval
 # --------------------------------------------------------------------------
@@ -5037,24 +4425,6 @@ r AS (
 SELECT query_id, vec_id, CAST(rn AS INT) AS rank, ROUND(cos, 4) AS cosine_sim
 FROM r WHERE rn <= 5
 """
-
-
-_prev_queries_q86 = queries
-
-
-def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:  # noqa: F811
-    out = _prev_queries_q86()
-    out["q86_batched_topk"] = q86_batched_topk
-    return out
-
-
-_prev_oracles_q86 = oracle_sql
-
-
-def oracle_sql() -> dict[str, str]:  # noqa: F811
-    out = _prev_oracles_q86()
-    out["q86_batched_topk"] = _Q86_SQL
-    return out
 
 
 # --------------------------------------------------------------------------
@@ -5131,24 +4501,6 @@ SELECT printf('st_%06d', i) AS clip_id,
        TRUE AS ok_bin
 FROM idx
 """
-
-
-_prev_queries_q87 = queries
-
-
-def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:  # noqa: F811
-    out = _prev_queries_q87()
-    out["q87_downmix"] = q87_downmix
-    return out
-
-
-_prev_oracles_q87 = oracle_sql
-
-
-def oracle_sql() -> dict[str, str]:  # noqa: F811
-    out = _prev_oracles_q87()
-    out["q87_downmix"] = _Q87_SQL
-    return out
 
 
 # --------------------------------------------------------------------------
@@ -5252,26 +4604,6 @@ SELECT printf('tr_%06d', i) AS clip_id,
        n AS total_samples
 FROM m
 """
-
-
-_prev_queries_q89 = queries
-
-
-def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:  # noqa: F811
-    out = _prev_queries_q89()
-    out["q88_trim_silence"] = q88_trim_silence
-    out["q89_segment"] = q89_segment
-    return out
-
-
-_prev_oracles_q89 = oracle_sql
-
-
-def oracle_sql() -> dict[str, str]:  # noqa: F811
-    out = _prev_oracles_q89()
-    out["q88_trim_silence"] = _Q88_SQL
-    out["q89_segment"] = _Q89_SQL
-    return out
 
 
 # --------------------------------------------------------------------------
@@ -5513,30 +4845,6 @@ WHERE o_custkey IN (SELECT c_custkey FROM customer WHERE c_custkey % 7 = 0)
 """
 
 
-_prev_queries_q93 = queries
-
-
-def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:  # noqa: F811
-    out = _prev_queries_q93()
-    out["q90_normalize"] = q90_normalize
-    out["q91_overlay"] = q91_overlay
-    out["q92_pitch"] = q92_pitch
-    out["q93_bloom_semi"] = q93_bloom_semi
-    return out
-
-
-_prev_oracles_q93 = oracle_sql
-
-
-def oracle_sql() -> dict[str, str]:  # noqa: F811
-    out = _prev_oracles_q93()
-    out["q90_normalize"] = _Q90_SQL
-    out["q91_overlay"] = _Q91_SQL
-    out["q92_pitch"] = _Q92_SQL
-    out["q93_bloom_semi"] = _Q93_SQL
-    return out
-
-
 # --------------------------------------------------------------------------
 # q94: snapshot content diff — which partitions changed between snapshots
 # --------------------------------------------------------------------------
@@ -5606,24 +4914,6 @@ SELECT part AS partition,
        CASE WHEN tot_b = 0 THEN NULL ELSE CAST(tot_b AS BIGINT) END AS n_rows_b
 FROM p
 """
-
-
-_prev_queries_q94 = queries
-
-
-def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:  # noqa: F811
-    out = _prev_queries_q94()
-    out["q94_snapshot_diff"] = q94_snapshot_diff
-    return out
-
-
-_prev_oracles_q94 = oracle_sql
-
-
-def oracle_sql() -> dict[str, str]:  # noqa: F811
-    out = _prev_oracles_q94()
-    out["q94_snapshot_diff"] = _Q94_SQL
-    return out
 
 
 # --------------------------------------------------------------------------
@@ -5703,22 +4993,8 @@ def q95_incremental_revalidation(spark: SparkSession, sf_dir: str) -> DataFrame:
     ), tmp)
 
 
-_prev_queries_q95 = queries
-
-
-def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:  # noqa: F811
-    out = _prev_queries_q95()
-    out["q95_incremental_revalidation"] = q95_incremental_revalidation
-    return out
-
-
-_prev_oracles_q95 = oracle_sql
-
-
-def oracle_sql() -> dict[str, str]:  # noqa: F811
-    out = _prev_oracles_q95()
-    out["q95_incremental_revalidation"] = _q21_sql(n_rows=1250, n_parts=5)
-    return out
+def _q95_sql() -> str:
+    return _q21_sql(n_rows=1250, n_parts=5)
 
 
 # --------------------------------------------------------------------------
@@ -5800,24 +5076,6 @@ FROM c cur JOIN c prv ON cur.window_id = prv.window_id + 1
 """
 
 
-_prev_queries_q96 = queries
-
-
-def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:  # noqa: F811
-    out = _prev_queries_q96()
-    out["q96_rolling_psi"] = q96_rolling_psi
-    return out
-
-
-_prev_oracles_q96 = oracle_sql
-
-
-def oracle_sql() -> dict[str, str]:  # noqa: F811
-    out = _prev_oracles_q96()
-    out["q96_rolling_psi"] = _q96_sql()
-    return out
-
-
 # --------------------------------------------------------------------------
 # q97: window-over-window rolling binned KS (PSI's companion)
 # --------------------------------------------------------------------------
@@ -5867,24 +5125,6 @@ SELECT cur.window_id AS window_id,
        CASE WHEN ({ks}) <= {KS_THRESHOLD} THEN 1 ELSE 0 END AS passed
 FROM c cur JOIN c prv ON cur.window_id = prv.window_id + 1
 """
-
-
-_prev_queries_q97 = queries
-
-
-def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:  # noqa: F811
-    out = _prev_queries_q97()
-    out["q97_rolling_ks"] = q97_rolling_ks
-    return out
-
-
-_prev_oracles_q97 = oracle_sql
-
-
-def oracle_sql() -> dict[str, str]:  # noqa: F811
-    out = _prev_oracles_q97()
-    out["q97_rolling_ks"] = _q97_sql()
-    return out
 
 
 # --------------------------------------------------------------------------
@@ -5995,24 +5235,6 @@ FROM rows_q GROUP BY part_id
 """
 
 
-_prev_queries_q98 = queries
-
-
-def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:  # noqa: F811
-    out = _prev_queries_q98()
-    out["q98_quarantine_routing"] = q98_quarantine_routing
-    return out
-
-
-_prev_oracles_q98 = oracle_sql
-
-
-def oracle_sql() -> dict[str, str]:  # noqa: F811
-    out = _prev_oracles_q98()
-    out["q98_quarantine_routing"] = _q98_sql()
-    return out
-
-
 # --------------------------------------------------------------------------
 # q99/q100: dedup survivor selection + deterministic corpus splits
 # --------------------------------------------------------------------------
@@ -6093,26 +5315,6 @@ FROM (
          ('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 15))::BIGINT % 1000 AS b
   FROM documents)
 """
-
-
-_prev_queries_q100 = queries
-
-
-def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:  # noqa: F811
-    out = _prev_queries_q100()
-    out["q99_keep_canonical"] = q99_keep_canonical
-    out["q100_corpus_split"] = q100_corpus_split
-    return out
-
-
-_prev_oracles_q100 = oracle_sql
-
-
-def oracle_sql() -> dict[str, str]:  # noqa: F811
-    out = _prev_oracles_q100()
-    out["q99_keep_canonical"] = _Q99_SQL
-    out["q100_corpus_split"] = _Q100_SQL
-    return out
 
 
 # --------------------------------------------------------------------------
@@ -6204,26 +5406,6 @@ FROM customer
 )
 
 
-_prev_queries_q102 = queries
-
-
-def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:  # noqa: F811
-    out = _prev_queries_q102()
-    out["q101_file_skipping"] = q101_file_skipping
-    out["q102_zorder"] = q102_zorder
-    return out
-
-
-_prev_oracles_q102 = oracle_sql
-
-
-def oracle_sql() -> dict[str, str]:  # noqa: F811
-    out = _prev_oracles_q102()
-    out["q101_file_skipping"] = _Q101_SQL
-    out["q102_zorder"] = _Q102_SQL
-    return out
-
-
 # --------------------------------------------------------------------------
 # q103: small-file compaction planning (Iceberg maintenance shape)
 # --------------------------------------------------------------------------
@@ -6271,24 +5453,6 @@ SELECT partition, file_id, CAST(bytes AS BIGINT) AS bytes, is_small,
             THEN CAST(before_b // 40000 AS BIGINT) END AS compaction_group
 FROM p
 """
-
-
-_prev_queries_q103 = queries
-
-
-def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:  # noqa: F811
-    out = _prev_queries_q103()
-    out["q103_compaction_plan"] = q103_compaction_plan
-    return out
-
-
-_prev_oracles_q103 = oracle_sql
-
-
-def oracle_sql() -> dict[str, str]:  # noqa: F811
-    out = _prev_oracles_q103()
-    out["q103_compaction_plan"] = _Q103_SQL
-    return out
 
 
 # --------------------------------------------------------------------------
@@ -6355,25 +5519,11 @@ def q104_streaming_rolling_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_prev_queries_q104 = queries
-
-
-def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:  # noqa: F811
-    out = _prev_queries_q104()
-    out["q104_streaming_rolling_psi"] = q104_streaming_rolling_psi
-    return out
-
-
-_prev_oracles_q104 = oracle_sql
-
-
-def oracle_sql() -> dict[str, str]:  # noqa: F811
-    out = _prev_oracles_q104()
-    out["q104_streaming_rolling_psi"] = _q96_sql(
+def _q104_sql() -> str:
+    return _q96_sql(
         window_expr="CAST(date_diff('day', DATE '1970-01-01',"
         " CAST(ts AS DATE)) AS INT)"
     )
-    return out
 
 
 # --------------------------------------------------------------------------
@@ -6485,26 +5635,6 @@ FROM documents WHERE text IS NOT NULL
 """
 
 
-_prev_queries_q106 = queries
-
-
-def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:  # noqa: F811
-    out = _prev_queries_q106()
-    out["q105_split_on_silence"] = q105_split_on_silence
-    out["q106_transcript_edit_distance"] = q106_transcript_edit_distance
-    return out
-
-
-_prev_oracles_q106 = oracle_sql
-
-
-def oracle_sql() -> dict[str, str]:  # noqa: F811
-    out = _prev_oracles_q106()
-    out["q105_split_on_silence"] = _Q105_SQL
-    out["q106_transcript_edit_distance"] = _Q106_SQL
-    return out
-
-
 # --------------------------------------------------------------------------
 # q107: segment -> reassemble round trip (grouped payload shuffle)
 # --------------------------------------------------------------------------
@@ -6551,24 +5681,6 @@ SELECT printf('tr_%06d', i) AS clip_id,
        TRUE AS content_ok
 FROM idx
 """
-
-
-_prev_queries_q107 = queries
-
-
-def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:  # noqa: F811
-    out = _prev_queries_q107()
-    out["q107_concat_roundtrip"] = q107_concat_roundtrip
-    return out
-
-
-_prev_oracles_q107 = oracle_sql
-
-
-def oracle_sql() -> dict[str, str]:  # noqa: F811
-    out = _prev_oracles_q107()
-    out["q107_concat_roundtrip"] = _Q107_SQL
-    return out
 
 
 # --------------------------------------------------------------------------
@@ -6636,24 +5748,6 @@ SELECT b.user_id,
        ROUND(b.sum_value + COALESCE(s.sum_value, 0.0), 6) AS total_value
 FROM batch b LEFT JOIN stale s USING (user_id)
 """
-
-
-_prev_queries_q108 = queries
-
-
-def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:  # noqa: F811
-    out = _prev_queries_q108()
-    out["q108_enrich_with_state"] = q108_enrich_with_state
-    return out
-
-
-_prev_oracles_q108 = oracle_sql
-
-
-def oracle_sql() -> dict[str, str]:  # noqa: F811
-    out = _prev_oracles_q108()
-    out["q108_enrich_with_state"] = _Q108_SQL
-    return out
 
 
 # --------------------------------------------------------------------------
@@ -6743,24 +5837,6 @@ WHERE i % 5 <> 1
 """
 
 
-_prev_queries_q109 = queries
-
-
-def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:  # noqa: F811
-    out = _prev_queries_q109()
-    out["q109_audio_align"] = q109_audio_align
-    return out
-
-
-_prev_oracles_q109 = oracle_sql
-
-
-def oracle_sql() -> dict[str, str]:  # noqa: F811
-    out = _prev_oracles_q109()
-    out["q109_audio_align"] = _Q109_SQL
-    return out
-
-
 # --------------------------------------------------------------------------
 # q110: field-level AES-GCM crypto on sensitive columns (reference
 # util/crypto.py:17-72 via baskerville_tools.py:67-84) — Spark-native
@@ -6823,24 +5899,6 @@ SELECT event_id,
 FROM events
 WHERE event_id % 20 = 0
 """
-
-
-_prev_queries_q110 = queries
-
-
-def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:  # noqa: F811
-    out = _prev_queries_q110()
-    out["q110_sensitive_crypto"] = q110_sensitive_crypto
-    return out
-
-
-_prev_oracles_q110 = oracle_sql
-
-
-def oracle_sql() -> dict[str, str]:  # noqa: F811
-    out = _prev_oracles_q110()
-    out["q110_sensitive_crypto"] = _Q110_SQL
-    return out
 
 
 # --------------------------------------------------------------------------
@@ -6918,24 +5976,6 @@ FROM r
 """
 
 
-_prev_queries_q111 = queries
-
-
-def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:  # noqa: F811
-    out = _prev_queries_q111()
-    out["q111_bandwidth"] = q111_bandwidth
-    return out
-
-
-_prev_oracles_q111 = oracle_sql
-
-
-def oracle_sql() -> dict[str, str]:  # noqa: F811
-    out = _prev_oracles_q111()
-    out["q111_bandwidth"] = _Q111_SQL
-    return out
-
-
 # --------------------------------------------------------------------------
 # q112: gap-fill to a regular grid — forward fill WITHOUT a calendar join
 # (each observation explodes its own fill span off one lead() window).
@@ -6997,24 +6037,6 @@ SELECT user_id, grid_slot, value, event_type,
        grid_slot = slot AS is_observed
 FROM sel
 """
-
-
-_prev_queries_q112 = queries
-
-
-def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:  # noqa: F811
-    out = _prev_queries_q112()
-    out["q112_gap_fill"] = q112_gap_fill
-    return out
-
-
-_prev_oracles_q112 = oracle_sql
-
-
-def oracle_sql() -> dict[str, str]:  # noqa: F811
-    out = _prev_oracles_q112()
-    out["q112_gap_fill"] = _Q112_SQL
-    return out
 
 
 # --------------------------------------------------------------------------
@@ -7108,24 +6130,6 @@ FROM d
 """
 
 
-_prev_queries_q113 = queries
-
-
-def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:  # noqa: F811
-    out = _prev_queries_q113()
-    out["q113_mulaw_roundtrip"] = q113_mulaw_roundtrip
-    return out
-
-
-_prev_oracles_q113 = oracle_sql
-
-
-def oracle_sql() -> dict[str, str]:  # noqa: F811
-    out = _prev_oracles_q113()
-    out["q113_mulaw_roundtrip"] = _Q113_SQL
-    return out
-
-
 # --------------------------------------------------------------------------
 # q114: distributed BPE merge training — the tokenizer-TRAINING step
 # (functions/bpe.py): corpus → word-frequency table once, then per round
@@ -7165,24 +6169,6 @@ SELECT CAST(j + 1 AS INT) AS merge_rank,
        CAST(100 - 4 * j AS BIGINT) AS pair_count
 FROM idx
 """
-
-
-_prev_queries_q114 = queries
-
-
-def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:  # noqa: F811
-    out = _prev_queries_q114()
-    out["q114_bpe_merges"] = q114_bpe_merges
-    return out
-
-
-_prev_oracles_q114 = oracle_sql
-
-
-def oracle_sql() -> dict[str, str]:  # noqa: F811
-    out = _prev_oracles_q114()
-    out["q114_bpe_merges"] = _Q114_SQL
-    return out
 
 
 # --------------------------------------------------------------------------
@@ -7236,24 +6222,6 @@ SELECT 12, 4, 'z'
 """
 
 
-_prev_queries_q115 = queries
-
-
-def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:  # noqa: F811
-    out = _prev_queries_q115()
-    out["q115_bpe_tokenize"] = q115_bpe_tokenize
-    return out
-
-
-_prev_oracles_q115 = oracle_sql
-
-
-def oracle_sql() -> dict[str, str]:  # noqa: F811
-    out = _prev_oracles_q115()
-    out["q115_bpe_tokenize"] = _Q115_SQL
-    return out
-
-
 # --------------------------------------------------------------------------
 # q116: C4-style cross-document line dedup (boilerplate removal) — every
 # line keeps exactly one corpus-wide occurrence, min-(doc, line) owner.
@@ -7296,24 +6264,6 @@ SELECT CAST(i AS BIGINT) AS doc_id,
        CAST(CASE WHEN i = 0 THEN 0 ELSE 2 END AS BIGINT) AS n_lines_removed
 FROM idx
 """
-
-
-_prev_queries_q116 = queries
-
-
-def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:  # noqa: F811
-    out = _prev_queries_q116()
-    out["q116_dedup_lines"] = q116_dedup_lines
-    return out
-
-
-_prev_oracles_q116 = oracle_sql
-
-
-def oracle_sql() -> dict[str, str]:  # noqa: F811
-    out = _prev_oracles_q116()
-    out["q116_dedup_lines"] = _Q116_SQL
-    return out
 
 
 # --------------------------------------------------------------------------
@@ -7394,24 +6344,6 @@ SELECT printf('vd_%06d', i) AS clip_id,
        lg AS longest_gap
 FROM s
 """
-
-
-_prev_queries_q117 = queries
-
-
-def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:  # noqa: F811
-    out = _prev_queries_q117()
-    out["q117_vad_stats"] = q117_vad_stats
-    return out
-
-
-_prev_oracles_q117 = oracle_sql
-
-
-def oracle_sql() -> dict[str, str]:  # noqa: F811
-    out = _prev_oracles_q117()
-    out["q117_vad_stats"] = _Q117_SQL
-    return out
 
 
 # --------------------------------------------------------------------------
@@ -7526,24 +6458,6 @@ FROM a
 """
 
 
-_prev_queries_q118 = queries
-
-
-def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:  # noqa: F811
-    out = _prev_queries_q118()
-    out["q118_constraint_suite"] = q118_constraint_suite
-    return out
-
-
-_prev_oracles_q118 = oracle_sql
-
-
-def oracle_sql() -> dict[str, str]:  # noqa: F811
-    out = _prev_oracles_q118()
-    out["q118_constraint_suite"] = _Q118_SQL
-    return out
-
-
 # --------------------------------------------------------------------------
 # q119: mergeable stats state (checks/stats_state.py) — table-level stats
 # assembled by merging per-batch state rows instead of rescanning settled
@@ -7602,24 +6516,6 @@ SELECT part_id,
        TRUE AS distinct_ok
 FROM d GROUP BY part_id
 """
-
-
-_prev_queries_q119 = queries
-
-
-def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:  # noqa: F811
-    out = _prev_queries_q119()
-    out["q119_incremental_stats"] = q119_incremental_stats
-    return out
-
-
-_prev_oracles_q119 = oracle_sql
-
-
-def oracle_sql() -> dict[str, str]:  # noqa: F811
-    out = _prev_oracles_q119()
-    out["q119_incremental_stats"] = _Q119_SQL
-    return out
 
 
 # --------------------------------------------------------------------------
@@ -7756,24 +6652,6 @@ FROM kk
 """
 
 
-_prev_queries_q120 = queries
-
-
-def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:  # noqa: F811
-    out = _prev_queries_q120()
-    out["q120_histogram_drift_state"] = q120_histogram_drift_state
-    return out
-
-
-_prev_oracles_q120 = oracle_sql
-
-
-def oracle_sql() -> dict[str, str]:  # noqa: F811
-    out = _prev_oracles_q120()
-    out["q120_histogram_drift_state"] = _q120_sql()
-    return out
-
-
 # --------------------------------------------------------------------------
 # q121: runner-integrated mergeable states — the resumable protocol itself
 # (plant-done → crash → resume, q61's shape) now WRITES per-partition state
@@ -7894,24 +6772,6 @@ FROM c
 """
 
 
-_prev_queries_q121 = queries
-
-
-def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:  # noqa: F811
-    out = _prev_queries_q121()
-    out["q121_state_table_stats"] = q121_state_table_stats
-    return out
-
-
-_prev_oracles_q121 = oracle_sql
-
-
-def oracle_sql() -> dict[str, str]:  # noqa: F811
-    out = _prev_oracles_q121()
-    out["q121_state_table_stats"] = _q121_sql()
-    return out
-
-
 # --------------------------------------------------------------------------
 # q122: mergeable DECODE state (checks/audio_state.py) — the payload analog
 # of q119/q121: each ingest batch is decoded EXACTLY ONCE (mapInArrow, no
@@ -7988,24 +6848,6 @@ SELECT part_id,
        TRUE AS sum_abs_match
 FROM fl GROUP BY part_id
 """
-
-
-_prev_queries_q122 = queries
-
-
-def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:  # noqa: F811
-    out = _prev_queries_q122()
-    out["q122_audio_decode_state"] = q122_audio_decode_state
-    return out
-
-
-_prev_oracles_q122 = oracle_sql
-
-
-def oracle_sql() -> dict[str, str]:  # noqa: F811
-    out = _prev_oracles_q122()
-    out["q122_audio_decode_state"] = _q122_sql()
-    return out
 
 
 # --------------------------------------------------------------------------
@@ -8106,24 +6948,6 @@ SELECT event_type,
        TRUE AS distinct_ok
 FROM e GROUP BY event_type
 """
-
-
-_prev_queries_q123 = queries
-
-
-def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:  # noqa: F811
-    out = _prev_queries_q123()
-    out["q123_streaming_state_ingest"] = q123_streaming_state_ingest
-    return out
-
-
-_prev_oracles_q123 = oracle_sql
-
-
-def oracle_sql() -> dict[str, str]:  # noqa: F811
-    out = _prev_oracles_q123()
-    out["q123_streaming_state_ingest"] = _Q123_SQL
-    return out
 
 
 # --------------------------------------------------------------------------
@@ -8241,26 +7065,6 @@ FROM obs o FULL OUTER JOIN expected x ON o.partition = x.partition
 """
 
 
-_prev_queries_q125 = queries
-
-
-def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:  # noqa: F811
-    out = _prev_queries_q125()
-    out["q124_schema_evolution"] = q124_schema_evolution
-    out["q125_partition_completeness"] = q125_partition_completeness
-    return out
-
-
-_prev_oracles_q125 = oracle_sql
-
-
-def oracle_sql() -> dict[str, str]:  # noqa: F811
-    out = _prev_oracles_q125()
-    out["q124_schema_evolution"] = _Q124_SQL
-    out["q125_partition_completeness"] = _Q125_SQL
-    return out
-
-
 # --------------------------------------------------------------------------
 # q126: row-level snapshot diff drill-down — stage 2 of the incremental
 # story. q94 (snapshot_diff) finds WHICH partitions changed shuffling only
@@ -8318,24 +7122,6 @@ UNION ALL
 SELECT part, CAST(-event_id - 1 AS BIGINT), 'added'
 FROM scoped WHERE part = 2 AND event_id % 13 = 1
 """
-
-
-_prev_queries_q126 = queries
-
-
-def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:  # noqa: F811
-    out = _prev_queries_q126()
-    out["q126_row_level_diff"] = q126_row_level_diff
-    return out
-
-
-_prev_oracles_q126 = oracle_sql
-
-
-def oracle_sql() -> dict[str, str]:  # noqa: F811
-    out = _prev_oracles_q126()
-    out["q126_row_level_diff"] = _Q126_SQL
-    return out
 
 
 # --------------------------------------------------------------------------
@@ -8440,98 +7226,6 @@ agg AS (
   FROM base GROUP BY part_id)
 {union}
 """
-
-
-_prev_queries_q127 = queries
-
-
-def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:  # noqa: F811
-    out = _prev_queries_q127()
-    out["q127_psi_attribution"] = q127_psi_attribution
-    return out
-
-
-_prev_oracles_q127 = oracle_sql
-
-
-def oracle_sql() -> dict[str, str]:  # noqa: F811
-    out = _prev_oracles_q127()
-    out["q127_psi_attribution"] = _q127_sql()
-    return out
-
-
-# --------------------------------------------------------------------------
-# Driver-gate scheduling (VERDICT r05 "Next round" #1): the correctness
-# driver consumes queries() in dict insertion order and verifies a bounded
-# prefix per round (r01:31, r02:42, r03:45, r04:50, r05:50 —
-# CORRECTNESS_r0*.json; the r05 file holds exactly q49+q51–q99). After r05,
-# every gate q01–q99 has a driver-green row in SOME round; q100–q144 (45
-# gates) have only local-harness + judge-re-run signal. Emit those FIRST so
-# the round-6 window lands entirely on fresh hard signal, padded with the
-# five OLDEST driver-green gates (q01–q05, r01 vintage) as regression
-# canaries; the rest follows in numeric order. The key → callable mapping
-# is unchanged — this reorders, never renames.
-# --------------------------------------------------------------------------
-
-_DRIVER_UNPROVEN_FIRST = [
-    # q21 leads: bench.py materializes the FIRST queries() entry as its
-    # untimed warm-up, and q21 is the gate whose shapes (stats agg,
-    # uniqueness, RI join, audio decode, shared clip fixture) the other
-    # protocol gates reuse — leading with it absorbs the one-time codegen /
-    # python-worker costs exactly where the harness intends them absorbed.
-    # It is driver-green since r01, so it doubles as the first canary.
-    "q21_clip_validation",
-] + [
-    f"q{n}_{s}" for n, s in [
-        (100, "corpus_split"),
-        (101, "file_skipping"), (102, "zorder"),
-        (103, "compaction_plan"), (104, "streaming_rolling_psi"),
-        (105, "split_on_silence"), (106, "transcript_edit_distance"),
-        (107, "concat_roundtrip"), (108, "enrich_with_state"),
-        (109, "audio_align"), (110, "sensitive_crypto"),
-        (111, "bandwidth"), (112, "gap_fill"),
-        (113, "mulaw_roundtrip"), (114, "bpe_merges"),
-        (115, "bpe_tokenize"), (116, "dedup_lines"),
-        (117, "vad_stats"), (118, "constraint_suite"),
-        (119, "incremental_stats"), (120, "histogram_drift_state"),
-        (121, "state_table_stats"), (122, "audio_decode_state"),
-        (123, "streaming_state_ingest"),
-        (124, "schema_evolution"), (125, "partition_completeness"),
-        (126, "row_level_diff"), (127, "psi_attribution"),
-        (128, "metric_anomalies"),
-        (129, "suggest_constraints"), (130, "functional_deps"),
-        (131, "dc_offset"), (132, "chi2_mix"),
-        (133, "mannwhitney"), (134, "channel_balance"),
-        (135, "zipf_fit"), (136, "spearman"),
-        (137, "mutual_info"), (138, "benford"),
-        (139, "rolling_chi2"), (140, "token_budget"),
-        (141, "label_conflicts"), (142, "wasserstein_drift"),
-        (143, "partition_spill"), (144, "out_of_order"),
-        # oldest driver-green gates (r01) as canaries in the window's tail
-        (1, "request_sets"), (2, "request_intervals"),
-        (3, "top_event_per_user"), (4, "pivot_event_counts"),
-    ]
-]
-
-
-def _reorder_for_driver(full: dict) -> dict:
-    first = {k: full[k] for k in _DRIVER_UNPROVEN_FIRST if k in full}
-    rest = {k: v for k, v in full.items() if k not in first}
-    return {**first, **rest}
-
-
-_prev_queries_reorder = queries
-
-
-def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:  # noqa: F811
-    return _reorder_for_driver(_prev_queries_reorder())
-
-
-_prev_oracles_reorder = oracle_sql
-
-
-def oracle_sql() -> dict[str, str]:  # noqa: F811
-    return _reorder_for_driver(_prev_oracles_reorder())
 
 
 # --------------------------------------------------------------------------
@@ -8639,26 +7333,6 @@ SELECT run_id, part_id, column_name, metric_name,
        )) AS anomaly
 FROM det
 """
-
-
-_prev_queries_q128 = queries
-
-
-def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:  # noqa: F811
-    out = _prev_queries_q128()
-    out["q128_metric_anomalies"] = q128_metric_anomalies
-    # re-apply the driver ordering: q128 is unproven and belongs in the
-    # front window with the rest of _DRIVER_UNPROVEN_FIRST
-    return _reorder_for_driver(out)
-
-
-_prev_oracles_q128 = oracle_sql
-
-
-def oracle_sql() -> dict[str, str]:  # noqa: F811
-    out = _prev_oracles_q128()
-    out["q128_metric_anomalies"] = _Q128_SQL
-    return _reorder_for_driver(out)
 
 
 # --------------------------------------------------------------------------
@@ -8808,26 +7482,6 @@ FROM fd3
 """
 
 
-_prev_queries_q129 = queries
-
-
-def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:  # noqa: F811
-    out = _prev_queries_q129()
-    out["q129_suggest_constraints"] = q129_suggest_constraints
-    out["q130_functional_deps"] = q130_functional_deps
-    return _reorder_for_driver(out)
-
-
-_prev_oracles_q129 = oracle_sql
-
-
-def oracle_sql() -> dict[str, str]:  # noqa: F811
-    out = _prev_oracles_q129()
-    out["q129_suggest_constraints"] = _Q129_SQL
-    out["q130_functional_deps"] = _Q130_SQL
-    return _reorder_for_driver(out)
-
-
 # --------------------------------------------------------------------------
 # q131: audio DC-offset QA vs exact closed forms — the third leg of the
 # ingest QA trio (levels q83, frequency content q84). 300 synthesized
@@ -8888,24 +7542,6 @@ SELECT printf('bias_%06d', i) AS clip_id,
          AS dc_suspect
 FROM idx
 """
-
-
-_prev_queries_q131 = queries
-
-
-def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:  # noqa: F811
-    out = _prev_queries_q131()
-    out["q131_dc_offset"] = q131_dc_offset
-    return _reorder_for_driver(out)
-
-
-_prev_oracles_q131 = oracle_sql
-
-
-def oracle_sql() -> dict[str, str]:  # noqa: F811
-    out = _prev_oracles_q131()
-    out["q131_dc_offset"] = _Q131_SQL
-    return _reorder_for_driver(out)
 
 
 # --------------------------------------------------------------------------
@@ -9020,26 +7656,6 @@ FROM pg CROSS JOIN tot
 """
 
 
-_prev_queries_q132 = queries
-
-
-def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:  # noqa: F811
-    out = _prev_queries_q132()
-    out["q132_chi2_mix"] = q132_chi2_mix
-    out["q133_mannwhitney"] = q133_mannwhitney
-    return _reorder_for_driver(out)
-
-
-_prev_oracles_q132 = oracle_sql
-
-
-def oracle_sql() -> dict[str, str]:  # noqa: F811
-    out = _prev_oracles_q132()
-    out["q132_chi2_mix"] = _Q132_SQL
-    out["q133_mannwhitney"] = _Q133_SQL
-    return _reorder_for_driver(out)
-
-
 # --------------------------------------------------------------------------
 # q134: stereo channel-balance QA vs exact closed forms — dead channels,
 # polarity flips and fake stereo are invisible to every mono stat. 300
@@ -9131,24 +7747,6 @@ FROM idx
 """
 
 
-_prev_queries_q134 = queries
-
-
-def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:  # noqa: F811
-    out = _prev_queries_q134()
-    out["q134_channel_balance"] = q134_channel_balance
-    return _reorder_for_driver(out)
-
-
-_prev_oracles_q134 = oracle_sql
-
-
-def oracle_sql() -> dict[str, str]:  # noqa: F811
-    out = _prev_oracles_q134()
-    out["q134_channel_balance"] = _Q134_SQL
-    return _reorder_for_driver(out)
-
-
 # --------------------------------------------------------------------------
 # q135: Zipf power-law fit of the corpus token-frequency curve — the
 # one-number corpus-health screen (template floods flatten the slope,
@@ -9200,24 +7798,6 @@ SELECT CAST(n AS BIGINT) AS n_ranked,
              / ((n * sxx - sx * sx) * (n * syy - sy * sy)), 6) AS r2
 FROM s
 """
-
-
-_prev_queries_q135 = queries
-
-
-def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:  # noqa: F811
-    out = _prev_queries_q135()
-    out["q135_zipf_fit"] = q135_zipf_fit
-    return _reorder_for_driver(out)
-
-
-_prev_oracles_q135 = oracle_sql
-
-
-def oracle_sql() -> dict[str, str]:  # noqa: F811
-    out = _prev_oracles_q135()
-    out["q135_zipf_fit"] = _Q135_SQL
-    return _reorder_for_driver(out)
 
 
 # --------------------------------------------------------------------------
@@ -9274,24 +7854,6 @@ FROM s
 """
 
 
-_prev_queries_q136 = queries
-
-
-def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:  # noqa: F811
-    out = _prev_queries_q136()
-    out["q136_spearman"] = q136_spearman
-    return _reorder_for_driver(out)
-
-
-_prev_oracles_q136 = oracle_sql
-
-
-def oracle_sql() -> dict[str, str]:  # noqa: F811
-    out = _prev_oracles_q136()
-    out["q136_spearman"] = _Q136_SQL
-    return _reorder_for_driver(out)
-
-
 # --------------------------------------------------------------------------
 # q137: mutual information between two categorical columns — the symmetric
 # whole-table dependence screen next to q132's per-group chi2: a column
@@ -9343,24 +7905,6 @@ FROM s
 """
 
 
-_prev_queries_q137 = queries
-
-
-def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:  # noqa: F811
-    out = _prev_queries_q137()
-    out["q137_mutual_info"] = q137_mutual_info
-    return _reorder_for_driver(out)
-
-
-_prev_oracles_q137 = oracle_sql
-
-
-def oracle_sql() -> dict[str, str]:  # noqa: F811
-    out = _prev_oracles_q137()
-    out["q137_mutual_info"] = _Q137_SQL
-    return _reorder_for_driver(out)
-
-
 # --------------------------------------------------------------------------
 # q138: Benford first-significant-digit screen — fabricated/template
 # numeric columns break the Benford curve before their moments look
@@ -9410,24 +7954,6 @@ SELECT digit,
                  - LOG10(1.0 + 1.0 / digit)), 6) AS abs_dev
 FROM full_d CROSS JOIN tot
 """
-
-
-_prev_queries_q138 = queries
-
-
-def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:  # noqa: F811
-    out = _prev_queries_q138()
-    out["q138_benford"] = q138_benford
-    return _reorder_for_driver(out)
-
-
-_prev_oracles_q138 = oracle_sql
-
-
-def oracle_sql() -> dict[str, str]:  # noqa: F811
-    out = _prev_oracles_q138()
-    out["q138_benford"] = _Q138_SQL
-    return _reorder_for_driver(out)
 
 
 # --------------------------------------------------------------------------
@@ -9486,24 +8012,6 @@ FROM c cur JOIN c prv ON cur.window_id = prv.window_id + 1
 """
 
 
-_prev_queries_q139 = queries
-
-
-def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:  # noqa: F811
-    out = _prev_queries_q139()
-    out["q139_rolling_chi2"] = q139_rolling_chi2
-    return _reorder_for_driver(out)
-
-
-_prev_oracles_q139 = oracle_sql
-
-
-def oracle_sql() -> dict[str, str]:  # noqa: F811
-    out = _prev_oracles_q139()
-    out["q139_rolling_chi2"] = _q139_sql()
-    return _reorder_for_driver(out)
-
-
 # --------------------------------------------------------------------------
 # q140: budget-constrained corpus selection — "the greedy prefix of the
 # corpus, in priority order, up to N tokens" (training-mix composition).
@@ -9558,24 +8066,6 @@ FROM t
 """
 
 
-_prev_queries_q140 = queries
-
-
-def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:  # noqa: F811
-    out = _prev_queries_q140()
-    out["q140_token_budget"] = q140_token_budget
-    return _reorder_for_driver(out)
-
-
-_prev_oracles_q140 = oracle_sql
-
-
-def oracle_sql() -> dict[str, str]:  # noqa: F811
-    out = _prev_oracles_q140()
-    out["q140_token_budget"] = _Q140_SQL
-    return _reorder_for_driver(out)
-
-
 # --------------------------------------------------------------------------
 # q141: cross-modal label-conflict detection — identical DECODED audio
 # content carrying disagreeing transcripts (label noise). The corpus is the
@@ -9626,24 +8116,6 @@ SELECT printf('clip_%012d', s) AS group_key,
        CAST(2 AS BIGINT) AS n_labels
 FROM g CROSS JOIN (VALUES (0), (1)) AS v(m)
 """
-
-
-_prev_queries_q141 = queries
-
-
-def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:  # noqa: F811
-    out = _prev_queries_q141()
-    out["q141_label_conflicts"] = q141_label_conflicts
-    return _reorder_for_driver(out)
-
-
-_prev_oracles_q141 = oracle_sql
-
-
-def oracle_sql() -> dict[str, str]:  # noqa: F811
-    out = _prev_oracles_q141()
-    out["q141_label_conflicts"] = _Q141_SQL
-    return _reorder_for_driver(out)
 
 
 # --------------------------------------------------------------------------
@@ -9728,24 +8200,6 @@ WHERE tot_a > 0 AND tot_b > 0
 """
 
 
-_prev_queries_q142 = queries
-
-
-def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:  # noqa: F811
-    out = _prev_queries_q142()
-    out["q142_wasserstein_drift"] = q142_wasserstein_drift
-    return _reorder_for_driver(out)
-
-
-_prev_oracles_q142 = oracle_sql
-
-
-def oracle_sql() -> dict[str, str]:  # noqa: F811
-    out = _prev_oracles_q142()
-    out["q142_wasserstein_drift"] = _Q142_SQL
-    return _reorder_for_driver(out)
-
-
 # --------------------------------------------------------------------------
 # q143: partition-spill integrity — keys physically present in more than
 # one table partition (checks/consistency.partition_spill). Distinct from
@@ -9796,24 +8250,6 @@ SELECT printf('clip_%012d', s) AS clip_id,
 FROM fl
 WHERE s % 23 = 11 AND NOT dup_renamed
 """
-
-
-_prev_queries_q143 = queries
-
-
-def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:  # noqa: F811
-    out = _prev_queries_q143()
-    out["q143_partition_spill"] = q143_partition_spill
-    return _reorder_for_driver(out)
-
-
-_prev_oracles_q143 = oracle_sql
-
-
-def oracle_sql() -> dict[str, str]:  # noqa: F811
-    out = _prev_oracles_q143()
-    out["q143_partition_spill"] = _Q143_SQL
-    return _reorder_for_driver(out)
 
 
 # --------------------------------------------------------------------------
@@ -9869,19 +8305,178 @@ FROM a
 """
 
 
-_prev_queries_q144 = queries
+# ---------------------------------------------------------------------------
+# Gate registry: one (callable, oracle) row per gate, in driver order. A
+# gate's key is its callable's __name__; its oracle is the DuckDB SQL string
+# or a zero-arg builder that oracle_sql() calls. Adding a gate adds one row.
+#
+# Driver order: the correctness driver consumes queries() in insertion order
+# and verifies a bounded prefix per round. q21 leads: bench.py materializes
+# the first entry as its untimed warm-up, and q21's shapes (stats agg,
+# uniqueness, RI join, audio decode, shared clip fixture) are the ones the
+# other protocol gates reuse, so the one-time codegen / python-worker costs
+# land there. q100–q144 follow (the gates with the least driver history),
+# then the four oldest driver-green gates, q01–q04, as regression canaries,
+# then the rest in numeric order.
+# ---------------------------------------------------------------------------
+
+_GATES = (
+    (q21_clip_validation, _q21_sql),
+    (q100_corpus_split, _Q100_SQL),
+    (q101_file_skipping, _Q101_SQL),
+    (q102_zorder, _Q102_SQL),
+    (q103_compaction_plan, _Q103_SQL),
+    (q104_streaming_rolling_psi, _q104_sql),
+    (q105_split_on_silence, _Q105_SQL),
+    (q106_transcript_edit_distance, _Q106_SQL),
+    (q107_concat_roundtrip, _Q107_SQL),
+    (q108_enrich_with_state, _Q108_SQL),
+    (q109_audio_align, _Q109_SQL),
+    (q110_sensitive_crypto, _Q110_SQL),
+    (q111_bandwidth, _Q111_SQL),
+    (q112_gap_fill, _Q112_SQL),
+    (q113_mulaw_roundtrip, _Q113_SQL),
+    (q114_bpe_merges, _Q114_SQL),
+    (q115_bpe_tokenize, _Q115_SQL),
+    (q116_dedup_lines, _Q116_SQL),
+    (q117_vad_stats, _Q117_SQL),
+    (q118_constraint_suite, _Q118_SQL),
+    (q119_incremental_stats, _Q119_SQL),
+    (q120_histogram_drift_state, _q120_sql),
+    (q121_state_table_stats, _q121_sql),
+    (q122_audio_decode_state, _q122_sql),
+    (q123_streaming_state_ingest, _Q123_SQL),
+    (q124_schema_evolution, _Q124_SQL),
+    (q125_partition_completeness, _Q125_SQL),
+    (q126_row_level_diff, _Q126_SQL),
+    (q127_psi_attribution, _q127_sql),
+    (q128_metric_anomalies, _Q128_SQL),
+    (q129_suggest_constraints, _Q129_SQL),
+    (q130_functional_deps, _Q130_SQL),
+    (q131_dc_offset, _Q131_SQL),
+    (q132_chi2_mix, _Q132_SQL),
+    (q133_mannwhitney, _Q133_SQL),
+    (q134_channel_balance, _Q134_SQL),
+    (q135_zipf_fit, _Q135_SQL),
+    (q136_spearman, _Q136_SQL),
+    (q137_mutual_info, _Q137_SQL),
+    (q138_benford, _Q138_SQL),
+    (q139_rolling_chi2, _q139_sql),
+    (q140_token_budget, _Q140_SQL),
+    (q141_label_conflicts, _Q141_SQL),
+    (q142_wasserstein_drift, _Q142_SQL),
+    (q143_partition_spill, _Q143_SQL),
+    (q144_out_of_order, _Q144_SQL),
+    # regression canaries: the oldest driver-green gates
+    (q01_request_sets, _Q01_SQL),
+    (q02_request_intervals, _Q02_SQL),
+    (q03_top_event_per_user, _Q03_SQL),
+    (q04_pivot_event_counts, _Q04_SQL),
+    (q05_customers_without_orders, _Q05_SQL),
+    (q06_building_orders_semi, _Q06_SQL),
+    (q07_late_shipments, _Q07_SQL),
+    (q08_stats_profile, _Q08_SQL),
+    (q09_duplicate_custkeys, _Q09_SQL),
+    (q10_incident_detection, _Q10_SQL),
+    (q11_fingerprints, _Q11_SQL),
+    (q12_quality_features, _Q12_SQL),
+    (q13_lang_id, _langid_sql),
+    (q14_ann_topk, _Q14_SQL),
+    (q15_ngram_jaccard, _Q15_SQL),
+    (q16_exact_dups, _Q16_SQL),
+    (q17_pricing_summary, _Q17_SQL),
+    (q18_top_revenue_orders, _Q18_SQL),
+    (q19_minhash_pairs, _Q19_SQL),
+    (q20_simhash, _q20_sql),
+    (q22_vector_pairs, _Q22_SQL),
+    (q23_streaming_window_counts, _Q23_SQL),
+    (q24_sessionization, _Q24_SQL),
+    (q25_json_props, _Q25_SQL),
+    (q26_rollup_counts, _Q26_SQL),
+    (q27_asof_prev_click, _Q27_SQL),
+    (q28_stratified_sample, _q28_sql),
+    (q29_state_merge, _Q29_SQL),
+    (q30_cube_counts, _Q30_SQL),
+    (q31_heavy_both_types, _Q31_SQL),
+    (q32_srp_lsh_pairs, _Q32_SQL),
+    (q33_first_last_touch, _Q33_SQL),
+    (q34_map_features, _Q34_SQL),
+    (q35_simhash_near_dups, _q35_sql),
+    (q36_session_window, _Q36_SQL),
+    (q37_geo_localize, _Q37_SQL),
+    (q38_ivf_topk, _Q38_SQL),  # exact top-k on the planted-cluster corpus
+    (q39_streaming_dedup, _Q39_SQL),
+    (q40_image_features, _Q40_SQL),
+    (q41_video_frame_sample, _Q41_SQL),
+    (q42_dup_exemplars, _Q42_SQL),
+    (q43_first_last_agg, _Q33_SQL),  # same semantics, single-shuffle plan
+    (q44_drift_verdicts, _q44_sql),
+    (q45_streaming_kafka_shaped, _Q45_SQL),
+    (q46_sketch_accuracy, _q46_sql),
+    (q47_jdbc_segment_stats, _Q47_SQL),
+    (q48_ref_integrity, _Q48_SQL),
+    (q49_schema_enforce, _Q49_SQL),
+    (q50_pattern_violations, _Q50_SQL),
+    (q51_normalized_dups, _Q51_SQL),
+    (q52_heavy_hitter_tokens, _Q52_SQL),
+    (q53_standard_scale, _Q53_SQL),
+    (q54_string_index, _Q54_SQL),
+    (q55_iforest_outliers, _Q55_SQL),
+    (q56_gbm_labeler, _Q56_SQL),
+    (q57_feature_vector, _Q57_SQL),
+    (q58_feature_update, _Q58_SQL),
+    (q59_anomaly_thresholds, _Q59_SQL),
+    (q60_challenge_commands, _Q60_SQL),
+    # same closed-form grid as q21: resume must reproduce the one-shot run
+    (q61_resume_verdicts, _q21_sql),
+    (q62_feature_loop, _Q62_SQL),
+    (q63_sensitive_roundtrip, _Q63_SQL),
+    (q64_stateful_stream_stats, _Q64_SQL),
+    (q65_dedup_clusters, _Q65_SQL),
+    (q66_sliding_window_counts, _Q66_SQL),
+    (q67_chain_clusters_bigstar, _Q67_SQL),
+    (q68_incremental_chain_clusters, _Q67_SQL),
+    (q69_tfidf_cosine_pairs, _Q69_SQL),
+    (q70_containment_pairs, _Q70_SQL),
+    (q71_repetition_metrics, _Q71_SQL),
+    (q72_char_entropy, _Q72_SQL),
+    (q73_pii_scrub, _Q73_SQL),
+    (q74_payload_bytes, _Q74_SQL),
+    (q75_speaking_rate, _Q75_SQL),
+    (q76_decontamination, _Q76_SQL),
+    (q77_sequence_packing, _Q77_SQL),
+    (q78_mixture_sample, _q78_sql),
+    (q79_chunk_documents, _Q79_SQL),
+    (q80_vocab_oov, _Q80_SQL),
+    (q81_robust_outliers, _Q81_SQL),
+    (q82_audio_content_dedup, _Q82_SQL),
+    (q83_loudness_stats, _Q83_SQL),
+    (q84_spectral_features, _Q84_SQL),
+    (q85_resample, _Q85_SQL),
+    (q86_batched_topk, _Q86_SQL),
+    (q87_downmix, _Q87_SQL),
+    (q88_trim_silence, _Q88_SQL),
+    (q89_segment, _Q89_SQL),
+    (q90_normalize, _Q90_SQL),
+    (q91_overlay, _Q91_SQL),
+    (q92_pitch, _Q92_SQL),
+    (q93_bloom_semi, _Q93_SQL),
+    (q94_snapshot_diff, _Q94_SQL),
+    (q95_incremental_revalidation, _q95_sql),
+    (q96_rolling_psi, _q96_sql),
+    (q97_rolling_ks, _q97_sql),
+    (q98_quarantine_routing, _q98_sql),
+    (q99_keep_canonical, _Q99_SQL),
+)
 
 
-def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:  # noqa: F811
-    out = _prev_queries_q144()
-    out["q144_out_of_order"] = q144_out_of_order
-    return _reorder_for_driver(out)
+def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
+    return {fn.__name__: fn for fn, _ in _GATES}
 
 
-_prev_oracles_q144 = oracle_sql
-
-
-def oracle_sql() -> dict[str, str]:  # noqa: F811
-    out = _prev_oracles_q144()
-    out["q144_out_of_order"] = _Q144_SQL
-    return _reorder_for_driver(out)
+def oracle_sql() -> dict[str, str]:
+    """Every gate's oracle SQL; builders run per call, not at import."""
+    return {
+        fn.__name__: oracle() if callable(oracle) else oracle
+        for fn, oracle in _GATES
+    }

@@ -24,6 +24,14 @@ dominant, embarrassingly-parallel cost at production clip durations);
 SCALING_SUITE=full times the whole check suite, which at small inputs is
 bounded by the ~16 s serial stage-latency floor (a local-mode artifact).
 
+--only NAME...: times just the named gates (same session, untimed warm-up
+and noop-sink materialization) and prints their per-gate map as one JSON
+line, {"queries": {name: sec}, "failed": [...]}; no clip pass. An unknown
+name is an error.
+
+A gate that raises is timed -1.0 and named in the line's "failed" list, and
+the run exits 1 after printing it.
+
 --clips-only N: internal mode used by --scaling subprocesses.
 """
 
@@ -37,6 +45,7 @@ import subprocess
 import sys
 import tempfile
 import time
+import traceback
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
@@ -227,42 +236,64 @@ def clip_throughput(
             shutil.rmtree(tmp, ignore_errors=True)
 
 
-def run_default() -> None:
+def time_gates(spark, gates: dict) -> tuple[dict[str, float], list[str]]:
+    """Time each gate's noop-sink materialization. A gate that raises is
+    timed -1.0 and returned in the failed list."""
+    per_query: dict[str, float] = {}
+    failed: list[str] = []
+    for name, fn in gates.items():
+        t0 = time.time()
+        try:
+            _materialize(fn(spark, SF_DIR))
+            per_query[name] = round(time.time() - t0, 3)
+        except Exception:  # noqa: BLE001
+            print(f"{name} failed:", file=sys.stderr)
+            traceback.print_exc()
+            per_query[name] = -1.0
+            failed.append(name)
+        # queries that persist intermediates must not pollute the next one
+        spark.catalog.clearCache()
+    return per_query, failed
+
+
+def _emit(line: dict) -> None:
+    """Print one JSON line, then exit 1 if any gate failed."""
+    print(json.dumps(line, separators=(",", ":")), flush=True)
+    if line["failed"]:
+        sys.exit(1)
+
+
+def run_default(only: list[str] | None = None) -> None:
     import __spark_entry__ as entry_mod
     from baskerville_spark.session import get_session
+
+    qs = entry_mod.queries()
+    unknown = [n for n in only or () if n not in qs]
+    if unknown:
+        raise SystemExit(f"unknown gates: {' '.join(unknown)}")
 
     spark = get_session("bench", master=f"local[{CPUS}]", shuffle_partitions=int(CPUS))
     spark.sparkContext.setLogLevel("ERROR")
 
-    qs = entry_mod.queries()
     # untimed warm-up: absorb JVM C2 compilation, codegen, and the
     # python-worker import storm so the first timed query isn't penalized
     first = next(iter(qs.values()))
     _materialize(first(spark, SF_DIR))
     spark.catalog.clearCache()
 
-    per_query: dict[str, float] = {}
-    total = 0.0
-    for name, fn in qs.items():
-        t0 = time.time()
-        try:
-            df = fn(spark, SF_DIR)
-            _materialize(df)
-            el = time.time() - t0
-        except Exception:  # noqa: BLE001
-            el = -1.0
-        # queries that persist intermediates must not pollute the next one
-        spark.catalog.clearCache()
-        per_query[name] = round(el, 3)
-        if el > 0:
-            total += el
+    per_query, failed = time_gates(
+        spark, {n: qs[n] for n in only} if only else qs
+    )
+    if only:
+        _emit({"queries": per_query, "failed": failed})
+        return
 
     clip = clip_throughput(spark, BENCH_CLIPS, BENCH_PARTS, trials=BENCH_TRIALS)
     # headline = queries + ONE logical clip pass (the median trial), so the
     # value is comparable across rounds regardless of BENCH_TRIALS; the
     # per-trial detail lives in clip_bench. metric_version marks the change
     # (r2's JSON summed all trials).
-    total += clip["elapsed_s"]
+    total = sum(v for v in per_query.values() if v > 0) + clip["elapsed_s"]
 
     sf = SF_DIR.rstrip("/").split("sf")[-1]
     # Round-4 lesson: the 107-entry per-query map made the metric line longer
@@ -289,28 +320,23 @@ def run_default() -> None:
     slow5 = dict(
         sorted(per_query.items(), key=lambda kv: -kv[1])[:5]
     )
-    print(
-        json.dumps(
-            {
-                "metric": "validation_suite_plus_queries_wall",
-                "metric_version": 3,
-                "value": round(total, 3),
-                "unit": "sec",
-                "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
-                "clips_per_sec": clip["clips_per_sec"],
-                "clips_per_sec_min": clip["clips_per_sec_min"],
-                "clips_per_sec_max": clip["clips_per_sec_max"],
-                "n_queries": len(per_query),
-                "queries_failed": sorted(
-                    k for k, v in per_query.items() if v < 0
-                ),
-                "slowest5": slow5,
-                "per_query_file": detail_path,
-                "cpus": int(CPUS),
-                "loadavg": round(os.getloadavg()[0], 1),
-            },
-            separators=(",", ":"),
-        )
+    _emit(
+        {
+            "metric": "validation_suite_plus_queries_wall",
+            "metric_version": 3,
+            "value": round(total, 3),
+            "unit": "sec",
+            "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
+            "clips_per_sec": clip["clips_per_sec"],
+            "clips_per_sec_min": clip["clips_per_sec_min"],
+            "clips_per_sec_max": clip["clips_per_sec_max"],
+            "n_queries": len(per_query),
+            "failed": failed,
+            "slowest5": slow5,
+            "per_query_file": detail_path,
+            "cpus": int(CPUS),
+            "loadavg": round(os.getloadavg()[0], 1),
+        }
     )
 
 
@@ -518,5 +544,9 @@ if __name__ == "__main__":
             d = sys.argv[sys.argv.index("--dur") + 1].split(",")
             dur = (int(d[0]), int(d[1]))
         run_clips_only(int(sys.argv[2]), dur)
+    elif len(sys.argv) > 1 and sys.argv[1] == "--only":
+        if len(sys.argv) < 3:
+            raise SystemExit("--only needs at least one gate name")
+        run_default(sys.argv[2:])
     else:
         run_default()

@@ -153,9 +153,15 @@ def main() -> int:
 
     qs = entry_mod.queries()
     oracles = entry_mod.oracle_sql()
-    failures = []
+    failures = sorted(only - set(qs))
+    for name in failures:
+        print(f"FAIL  {name}: no such query")
     for name, fn in qs.items():
         if only and name not in only:
+            continue
+        if name not in oracles:
+            print(f"FAIL  {name}: no oracle in oracle_sql()")
+            failures.append(name)
             continue
         t0 = time.time()
         try:
@@ -168,11 +174,6 @@ def main() -> int:
             failures.append(name)
             continue
         el = time.time() - t0
-        if name not in oracles:
-            print(f"ok    {name}: rows-only ({len(srows)} rows, {el:.1f}s)")
-            if len(srows) == 0 and name != "q16_exact_dups":
-                print("      WARN: zero rows")
-            continue
         try:
             res = con.sql(oracles[name])
             ocols = list(res.columns)
