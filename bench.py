@@ -17,7 +17,8 @@ Honesty measures (this box hosts co-tenants and timings vary 2-6x):
   min/max spread embedded in the JSON.
 
 --scaling: runs the validation job at two parallelism levels (default
-local[2] vs local[8] — standing in for N and 4N executors per BASELINE.md)
+local[nproc/4] vs local[nproc] — standing in for N and 4N executors per
+BASELINE.md; SCALING_PAIR=N,M overrides)
 in separate processes and prints throughput at both + scaling efficiency.
 SCALING_SUITE=decode times only the audio decode+SNR invariant stage (the
 dominant, embarrassingly-parallel cost at production clip durations);
@@ -66,11 +67,19 @@ SCALING_ROUNDS = int(os.environ.get("SCALING_ROUNDS", "1"))
 # decode: time the audio decode+SNR stage only (3 stages, no serial floor);
 # full: the whole suite (~80 stages, floor-bound at small inputs)
 SCALING_SUITE = os.environ.get("SCALING_SUITE", "decode")
-# N and 4N cores for the scaling pair. Default 2→8: the raw-CPU ceiling on
-# this co-tenanted box (measured with a multiprocessing spin test) is ~0.92
-# at 2→8 but only ~0.68 at 8→32 — no engine can beat the hardware ceiling.
-SCALING_PAIR = tuple(
-    int(x) for x in os.environ.get("SCALING_PAIR", "2,8").split(",")
+
+
+def default_scaling_pair(n_cores: int) -> tuple[int, int]:
+    """N and 4N cores for the scaling pair, with 4N = every core the host
+    has: a pair above the host's core count measures oversubscription, not
+    scaling."""
+    return (max(1, n_cores // 4), n_cores)
+
+
+SCALING_PAIR = (
+    tuple(int(x) for x in os.environ["SCALING_PAIR"].split(","))
+    if "SCALING_PAIR" in os.environ
+    else default_scaling_pair(len(os.sched_getaffinity(0)))
 )
 # realistic clip durations for scaling runs so decode dominates scheduling
 SCALING_DUR = tuple(

@@ -47,3 +47,8 @@ def test_emit_exits_1_after_printing_failed_gates(capsys):
 def test_only_rejects_unknown_gate():
     with pytest.raises(SystemExit, match="q00_missing"):
         bench.run_default(["q21_clip_validation", "q00_missing"])
+
+
+def test_default_scaling_pair_fits_the_host():
+    assert bench.default_scaling_pair(4) == (1, 4)
+    assert bench.default_scaling_pair(32) == (8, 32)

@@ -4,6 +4,7 @@ idempotent here)."""
 
 from __future__ import annotations
 
+import json
 from datetime import datetime, timezone
 
 from baskerville_spark.generator import GenConfig, write_clips, write_transcript_ref
@@ -44,7 +45,7 @@ def test_resume_skips_done_partitions(spark, tmp_path):
     ) == []
 
 
-def test_fresh_run_processes_all(spark, tmp_path):
+def test_fresh_run_processes_all(spark, tmp_path, capsys):
     clips_p, tref_p, man_p, out_p = _paths(tmp_path)
     write_clips(spark, clips_p, CFG)
     write_transcript_ref(spark, tref_p, CFG)
@@ -52,6 +53,13 @@ def test_fresh_run_processes_all(spark, tmp_path):
         spark, clips_p, man_p, out_p, tref_p, cfg=ValidationConfig(check_audio=False)
     )
     assert processed == [0, 1, 2, 3]
+    # the run's summary is one JSON line on stderr
+    summary = json.loads(capsys.readouterr().err.strip().splitlines()[-1])
+    assert summary["processed"] == [0, 1, 2, 3]
+    assert set(summary["metrics"]) == {
+        "n_violations", "n_violating_clips", "n_failing_checks",
+    }
+    assert summary["metrics"]["n_violations"] > 0
     verdicts = spark.read.parquet(f"{out_p}/verdicts")
     assert verdicts.where("part_id = 0").count() > 0
     m = done_partitions(spark, man_p)
@@ -81,6 +89,81 @@ def test_retry_replaces_not_duplicates(spark, tmp_path):
     assert spark.read.parquet(f"{out_p}/verdicts").count() == v1
     assert spark.read.parquet(f"{out_p}/stats").count() == s1
     assert done_partitions(spark, man_p) == {0, 1, 2, 3}
+
+
+def test_sink_contract(spark, tmp_path):
+    """Each sink writes one file per partition directory, and the manifest's
+    per-partition metrics agree with the verdicts sink."""
+    import glob
+
+    import pyspark.sql.functions as F
+
+    clips_p, tref_p, man_p, out_p = _paths(tmp_path)
+    write_clips(spark, clips_p, CFG)
+    assert run_resumable(spark, clips_p, man_p, out_p) == [0, 1, 2, 3]
+
+    for sink in ("violations", "stats", "verdicts"):
+        part_dirs = glob.glob(f"{out_p}/{sink}/part_id=*")
+        assert part_dirs, sink
+        for d in part_dirs:
+            assert len(glob.glob(f"{d}/*.parquet")) == 1, d
+
+    expected = {
+        r["part_id"]: (r["n_rows"], r["n_viol"])
+        for r in spark.read.parquet(f"{out_p}/verdicts")
+        .groupBy("part_id")
+        .agg(F.max("n_rows").alias("n_rows"), F.sum("n_violations").alias("n_viol"))
+        .collect()
+    }
+    manifest = {
+        r["part_id"]: (r["n_rows"], r["n_violations"])
+        for r in spark.read.parquet(man_p).collect()
+    }
+    assert manifest == expected
+    assert sum(n for n, _ in manifest.values()) == CFG.n_rows
+
+
+def test_verdict_plan_schema_and_no_python_rdd(spark, tmp_path):
+    """The verdict grid keeps its schema, nullability included, and its plan
+    ships no Python-side DataFrame (no ``ExistingRDD`` scan)."""
+    from baskerville_spark.runtime.runner import run_validation
+
+    clips_p = str(tmp_path / "clips")
+    write_clips(spark, clips_p, CFG)
+    res = run_validation(
+        spark, spark.read.parquet(clips_p), persist_intermediate=False
+    )
+    assert [
+        (f.name, f.dataType.simpleString(), f.nullable)
+        for f in res.verdicts.schema.fields
+    ] == [
+        ("part_id", "int", True),
+        ("check_name", "string", True),
+        ("passed", "boolean", True),
+        ("metric_value", "double", True),
+        ("threshold", "double", False),
+        ("n_rows", "bigint", True),
+        ("n_violations", "bigint", True),
+    ]
+    plan = res.verdicts._jdf.queryExecution().executedPlan().toString()
+    assert "ExistingRDD" not in plan
+
+
+def test_delete_pending_sink_dirs(spark, tmp_path):
+    """Only the pending partitions' sink directories go; a sink directory
+    that does not exist is skipped."""
+    from baskerville_spark.runtime.runner import _delete_pending_sink_dirs
+
+    for p in (0, 1, 10):
+        (tmp_path / "verdicts" / f"part_id={p}").mkdir(parents=True)
+    (tmp_path / "verdicts" / "_SUCCESS").touch()
+    _delete_pending_sink_dirs(
+        spark, str(tmp_path), ("verdicts", "stats"), [1, 2]
+    )
+    assert sorted(x.name for x in (tmp_path / "verdicts").iterdir()) == [
+        "_SUCCESS", "part_id=0", "part_id=10",
+    ]
+    assert not (tmp_path / "stats").exists()
 
 
 def test_recommit_overwrites(tmp_path, spark):
