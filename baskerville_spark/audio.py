@@ -19,6 +19,13 @@ The per-row invariant (BASELINE.json input_hint): decoded PCM must be
 allclose to the deterministically regenerated reference signal at
 SNR >= 30 dB, plus exact transcript equality. If a real codec is wanted,
 replace `decode` and raise NotImplementedError for unknown codecs.
+
+Every Spark operator that reads payloads goes through the one Arrow
+boundary at the end of this module: ``decode_pass`` (one narrow row per
+clip) or ``map_payloads`` (rewrite / fan out rows, metadata carried). Both
+share one ``for batch / for row / decode`` loop, so every operator agrees
+on what a decodable clip is; an operator is a per-clip numpy kernel plus
+one call.
 """
 
 from __future__ import annotations
@@ -27,8 +34,13 @@ import hashlib
 import io
 import struct
 import zlib
+from typing import Callable, Iterator, Sequence
 
 import numpy as np
+import pyarrow as pa
+from pyspark.sql import DataFrame
+from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 # Optional-dependency seam: with soundfile/libsndfile present (real
 # clusters), payloads that are NOT the deterministic stand-in containers
@@ -186,3 +198,136 @@ def snr_db(ref: np.ndarray, test: np.ndarray) -> float:
     if p_sig == 0.0:
         return float("-inf")
     return 10.0 * np.log10(p_sig / p_err)
+
+
+# --------------------------------------------------------------------------
+# The Arrow boundary: one decode loop shared by every payload operator.
+# --------------------------------------------------------------------------
+
+
+def require_cols(df: DataFrame, names: Sequence[str]) -> None:
+    """Fail loudly, at call time, on a missing input column — never as a
+    KeyError inside a Python worker at action time, and never as
+    pyarrow's ``column(-1)``, which silently binds the LAST column."""
+    missing = [n for n in dict.fromkeys(names) if n not in df.columns]
+    if missing:
+        raise ValueError(
+            f"missing required column(s) {missing}; frame has {df.columns}"
+        )
+
+
+def _decoded(
+    b: pa.RecordBatch, args: Sequence[str]
+) -> Iterator[tuple[np.ndarray | None, list]]:
+    """(pcm, per-row ``args`` values) for each row of an Arrow batch; pcm
+    is None for a NULL payload, a payload that does not decode, and one
+    that decodes to zero samples — a clip with no samples has no content
+    to measure, rewrite or check."""
+    payloads = b.column("bytes").to_pylist()
+    codecs = b.column("codec").to_pylist()
+    extra = [b.column(a).to_pylist() for a in args]
+    for i, payload in enumerate(payloads):
+        pcm = decode(payload, codecs[i]) if payload is not None else None
+        yield (pcm if pcm is not None and len(pcm) else None), [c[i] for c in extra]
+
+
+def decode_pass(
+    df: DataFrame,
+    schema: T.StructType,
+    kernel: Callable[..., tuple | None],
+    args: Sequence[str] = (),
+    fail: tuple | None = None,
+) -> DataFrame:
+    """One narrow ``schema`` row per input row, each payload decoded once.
+
+    - Fields of ``schema`` that ``df`` carries pass through, cast to the
+      declared type; a ``part_id`` that ``df`` lacks becomes typed NULLs.
+      Callers hand in a projection, so a column that merely shares a
+      metric's name cannot shadow the kernel's field.
+    - ``decode_ok`` is set here: True when the payload is non-NULL,
+      decodes, has samples, and ``kernel`` does not return None.
+    - ``kernel(pcm, *row_values_of_args)`` returns the remaining fields,
+      in schema order. Failed rows get ``fail`` (default: all NULL).
+
+    ``args`` names input columns whose per-row values follow the PCM into
+    the kernel (``clip_id``, ``sr_hz``); constants bind in the kernel's
+    closure. Payload bytes never leave the Python side.
+    """
+    require_cols(df, ("bytes", "codec", *args))
+    names = schema.names
+    carried = [n for n in names if n in df.columns and n != "decode_ok"]
+    computed = [n for n in names if n not in carried
+                and n not in ("decode_ok", "part_id")]
+    fail = (None,) * len(computed) if fail is None else tuple(fail)
+    arrow = to_arrow_schema(schema)
+
+    def _run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for b in batches:
+            oks: list[bool] = []
+            cols: list[list] = [[] for _ in computed]
+            for pcm, row in _decoded(b, args):
+                out = kernel(pcm, *row) if pcm is not None else None
+                oks.append(out is not None)
+                for col, v in zip(cols, fail if out is None else out):
+                    col.append(v)
+            by_name = dict(zip(computed, cols))
+            arrays = []
+            for f in arrow:
+                if f.name == "decode_ok":
+                    arrays.append(pa.array(oks, f.type))
+                elif f.name in by_name:
+                    arrays.append(pa.array(by_name[f.name], f.type))
+                elif f.name in carried:
+                    arrays.append(b.column(f.name).cast(f.type))
+                else:  # part_id the input lacks
+                    arrays.append(pa.nulls(len(b), f.type))
+            yield pa.RecordBatch.from_arrays(arrays, schema=arrow)
+
+    cols = list(dict.fromkeys([*carried, "bytes", "codec", *args]))
+    return df.select(*cols).mapInArrow(_run, schema=schema)
+
+
+def map_payloads(
+    df: DataFrame,
+    fn: Callable[..., list[dict]],
+    out_schema: T.StructType | None = None,
+    args: Sequence[str] = (),
+) -> DataFrame:
+    """Rewrite or fan out rows, every other column carried through.
+
+    ``fn(pcm, *row_values_of_args)`` returns one dict of column
+    replacements per OUTPUT row (``{"bytes": ..., "sr_hz": ...}``; new
+    ``out_schema`` columns such as ``seg_idx`` go in the same dict, and
+    every dict names the same columns); an empty list drops the row. Rows
+    without decodable samples drop. Carried columns are Arrow ``take``s of
+    the input batch — metadata never round-trips through Python objects.
+    """
+    require_cols(df, ("bytes", "codec", *args))
+    out_schema = out_schema or df.schema
+    new = to_arrow_schema(
+        T.StructType([f for f in out_schema if f.name not in df.columns])
+    )
+
+    def _run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for b in batches:
+            keep: list[int] = []
+            outs: list[dict] = []
+            for i, (pcm, row) in enumerate(_decoded(b, args)):
+                if pcm is None:
+                    continue
+                for d in fn(pcm, *row):
+                    keep.append(i)
+                    outs.append(d)
+            idx = pa.array(keep, pa.int64())
+            replaced = {k for d in outs for k in d}
+            arrays, fields = [], []
+            for name in out_schema.names:
+                f = new.field(name) if name in new.names else b.schema.field(name)
+                if name in new.names or name in replaced:
+                    arrays.append(pa.array([d[name] for d in outs], f.type))
+                else:
+                    arrays.append(b.column(name).take(idx))
+                fields.append(f)
+            yield pa.RecordBatch.from_arrays(arrays, schema=pa.schema(fields))
+
+    return df.mapInArrow(_run, schema=out_schema)

@@ -26,60 +26,36 @@ ratios derive from the merged row; settled clips are never re-decoded.
 
 from __future__ import annotations
 
-from typing import Iterator, Sequence
+from typing import Sequence
 
 import numpy as np
-import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from baskerville_spark import audio
 
 __all__ = ["decode_state", "state_from_per_clip", "merge_decode_states"]
 
-_PER_CLIP = pa.schema(
+_PER_CLIP_SCHEMA = T.StructType(
     [
-        pa.field("part_id", pa.int32()),
-        pa.field("decode_ok", pa.bool_()),
-        pa.field("n_samples", pa.int64()),
-        pa.field("clipped_samples", pa.int64()),
-        pa.field("sum_abs", pa.int64()),
+        T.StructField("part_id", T.IntegerType()),
+        T.StructField("decode_ok", T.BooleanType()),
+        T.StructField("n_samples", T.LongType()),
+        T.StructField("clipped_samples", T.LongType()),
+        T.StructField("sum_abs", T.LongType()),
     ]
 )
 
+# what a clip that fails to decode contributes to the state sums
+STATE_FAIL = (0, 0, 0)
 
-def _decode_batches(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-    """Arrow-native decode loop: payloads stay zero-copy buffer slices
-    until the codec touches them; output is 5 narrow columns per clip."""
-    for b in batches:
-        payloads = b.column(b.schema.get_field_index("bytes"))
-        codecs = b.column(b.schema.get_field_index("codec")).to_pylist()
-        n = len(b)
-        oks = [False] * n
-        n_samp = [0] * n
-        clipped = [0] * n
-        sum_abs = [0] * n
-        for i in range(n):
-            pv = payloads[i]
-            payload = pv.as_py() if pv.is_valid else None
-            pcm = audio.decode(payload, codecs[i]) if payload is not None else None
-            if pcm is None:
-                continue
-            oks[i] = True
-            n_samp[i] = len(pcm)
-            a = np.abs(pcm.astype(np.int32))  # |-32768| overflows int16
-            clipped[i] = int(np.count_nonzero(a >= 32767))
-            sum_abs[i] = int(a.sum(dtype=np.int64))
-        yield pa.RecordBatch.from_arrays(
-            [
-                b.column(b.schema.get_field_index("part_id")).cast(pa.int32()),
-                pa.array(oks, pa.bool_()),
-                pa.array(n_samp, pa.int64()),
-                pa.array(clipped, pa.int64()),
-                pa.array(sum_abs, pa.int64()),
-            ],
-            schema=_PER_CLIP,
-        )
+
+def state_kernel(pcm: np.ndarray) -> tuple[int, int, int]:
+    """(n_samples, clipped_samples, sum_abs) of one decoded clip — the
+    per-clip state fields, shared with the SNR invariant's decode pass."""
+    a = np.abs(pcm.astype(np.int32))  # |-32768| overflows int16
+    return len(pcm), int(np.count_nonzero(a >= 32767)), int(a.sum(dtype=np.int64))
 
 
 def decode_state(
@@ -90,11 +66,12 @@ def decode_state(
     Plan shape: projection(part_id, bytes, codec) → mapInArrow (no shuffle;
     payloads never cross an exchange) → single hash aggregate of narrow
     longs (map-side partials). The state row is O(groups), not O(clips).
+    Decode success follows ``audio.decode_pass`` — the rule the invariant
+    reports — so an empty payload counts as failed on both paths.
     """
-    per_clip = clips.select("part_id", "bytes", "codec").mapInArrow(
-        _decode_batches,
-        schema="part_id int, decode_ok boolean, n_samples long, "
-        "clipped_samples long, sum_abs long",
+    per_clip = audio.decode_pass(
+        clips.select("part_id", "bytes", "codec"), _PER_CLIP_SCHEMA,
+        state_kernel, fail=STATE_FAIL,
     )
     return state_from_per_clip(per_clip, group_by)
 

@@ -5,9 +5,10 @@ deterministic reference signal with SNR >= 30 dB, and the transcript must
 equal the authoritative transcript. The reference's per-row analogs are all
 row-at-a-time Python UDFs (SURVEY.md §2.9, e.g. udf_compute_geotime at
 src/baskerville/spark/udfs.py:41-62) — forbidden here; we use
-``mapInPandas`` so rows cross the JVM/Python boundary in Arrow record
-batches (capped by spark.sql.execution.arrow.maxRecordsPerBatch, see
-session.py — audio payloads make batch sizing a memory-safety issue).
+``mapInArrow`` (through ``audio.decode_pass``) so rows cross the
+JVM/Python boundary in Arrow record batches (capped by
+spark.sql.execution.arrow.maxRecordsPerBatch, see session.py — audio
+payloads make batch sizing a memory-safety issue).
 
 Scale notes:
 - The transcript dim is joined BEFORE the decode stage with a broadcast (or
@@ -15,21 +16,20 @@ Scale notes:
 - Decode is embarrassingly parallel; no shuffle. The only movement is the
   Arrow exchange. numpy work inside is per-clip vectorized.
 - Output is narrow (booleans + floats) — payload bytes are dropped on the
-  Python side and never re-serialized.
+  Python side and never re-serialized. ``transcript_ok``, ``byte_len`` and
+  the echoed metadata are SQL in the projection in front of the pass and
+  ride through it; the Python side only decodes.
 """
 
 from __future__ import annotations
 
-from typing import Iterator
-
 import numpy as np
-import pyarrow as pa
-import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from baskerville_spark import audio
+from baskerville_spark.checks.audio_state import STATE_FAIL, state_kernel
 
 INVARIANT_RESULT_SCHEMA = T.StructType(
     [
@@ -60,88 +60,15 @@ INVARIANT_RESULT_SCHEMA = T.StructType(
 )
 
 
-_ARROW_OUT = pa.schema(
-    [
-        pa.field("part_id", pa.int32()),
-        pa.field("clip_id", pa.string()),
-        pa.field("snr_db", pa.float64()),
-        pa.field("snr_ok", pa.bool_()),
-        pa.field("decode_ok", pa.bool_()),
-        pa.field("transcript_ok", pa.bool_()),
-        pa.field("byte_len", pa.int64()),
-        pa.field("sr_hz", pa.int32()),
-        pa.field("dur_ms", pa.int32()),
-        pa.field("codec", pa.string()),
-        pa.field("n_samples", pa.int64()),
-        pa.field("clipped_samples", pa.int64()),
-        pa.field("sum_abs", pa.int64()),
-    ]
-)
-
-
-def _check_arrow_batches(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-    """Arrow-native check loop: no pandas materialization, payload bytes are
-    zero-copy slices of the Arrow buffer until decode."""
-    for b in batches:
-        payloads = b.column(b.schema.get_field_index("bytes"))
-        codecs = b.column(b.schema.get_field_index("codec")).to_pylist()
-        srs = b.column(b.schema.get_field_index("sr_hz")).to_pylist()
-        clip_ids = b.column(b.schema.get_field_index("clip_id")).to_pylist()
-        transcripts = b.column(b.schema.get_field_index("transcript")).to_pylist()
-        trefs = b.column(b.schema.get_field_index("transcript_ref")).to_pylist()
-        part_ids = b.column(b.schema.get_field_index("part_id"))
-
-        n = len(b)
-        snr_dbs: list[float | None] = [None] * n
-        snr_oks: list[bool] = [False] * n
-        decode_oks: list[bool] = [False] * n
-        transcript_oks: list[bool | None] = [None] * n
-        n_samps: list[int] = [0] * n
-        clippeds: list[int] = [0] * n
-        sum_abss: list[int] = [0] * n
-        for i in range(n):
-            pv = payloads[i]
-            payload = pv.as_py() if pv.is_valid else None
-            pcm = (
-                audio.decode(payload, codecs[i]) if payload is not None else None
-            )
-            if pcm is not None and len(pcm) > 0:
-                a = np.abs(pcm.astype(np.int32))  # |-32768| overflows int16
-                n_samps[i] = len(pcm)
-                clippeds[i] = int(np.count_nonzero(a >= 32767))
-                sum_abss[i] = int(a.sum(dtype=np.int64))
-                sr = int(srs[i]) if srs[i] is not None else 16000
-                # reference signal regenerated deterministically from clip_id;
-                # sample count inferred from the decoded payload (dur_ms may
-                # be null/bad — that's the range check's job, not this one's)
-                ref = audio.synth_pcm_n(clip_ids[i], sr, len(pcm))
-                s = audio.snr_db(ref, pcm)
-                snr_dbs[i] = 999.0 if s == float("inf") else s
-                snr_oks[i] = bool(s >= audio.SNR_THRESHOLD_DB)
-                decode_oks[i] = True
-            if trefs[i] is not None:
-                transcript_oks[i] = bool(transcripts[i] == trefs[i])
-        yield pa.RecordBatch.from_arrays(
-            [
-                part_ids.cast(pa.int32()),
-                pa.array(clip_ids, pa.string()),
-                pa.array(snr_dbs, pa.float64()),
-                pa.array(snr_oks, pa.bool_()),
-                pa.array(decode_oks, pa.bool_()),
-                pa.array(transcript_oks, pa.bool_()),
-                # payload length rides out of the SAME pass that decodes —
-                # an O(1) offsets difference per row (pyarrow kernel), no
-                # extra payload IO; feeds the byte-consistency check
-                pc.cast(pc.binary_length(payloads), pa.int64()),
-                pc.cast(b.column(b.schema.get_field_index("sr_hz")), pa.int32()),
-                pc.cast(b.column(b.schema.get_field_index("dur_ms")), pa.int32()),
-                pc.cast(b.column(b.schema.get_field_index("codec")), pa.string()),
-                pa.array(n_samps, pa.int64()),
-                pa.array(clippeds, pa.int64()),
-                pa.array(sum_abss, pa.int64()),
-            ],
-            schema=_ARROW_OUT,
-        )
+def _snr_kernel(pcm: np.ndarray, clip_id: str, sr_hz: int | None) -> tuple:
+    # reference signal regenerated deterministically from clip_id; sample
+    # count inferred from the decoded payload (dur_ms may be null/bad —
+    # that's the range check's job, not this one's)
+    sr = int(sr_hz) if sr_hz is not None else 16000
+    ref = audio.synth_pcm_n(clip_id, sr, len(pcm))
+    s = audio.snr_db(ref, pcm)
+    snr = 999.0 if s == float("inf") else s
+    return (snr, bool(s >= audio.SNR_THRESHOLD_DB)) + state_kernel(pcm)
 
 
 def audio_invariant(
@@ -161,9 +88,21 @@ def audio_invariant(
         if broadcast_dim:
             dim = F.broadcast(dim)
         df = df.join(dim, on="clip_id", how="left")
+        transcript_ok = (
+            "IF(transcript_ref IS NULL, NULL, transcript <=> transcript_ref)"
+        )
     else:
-        df = df.withColumn("transcript_ref", F.lit(None).cast("string"))
-    return df.mapInArrow(_check_arrow_batches, schema=INVARIANT_RESULT_SCHEMA)
+        transcript_ok = "CAST(NULL AS BOOLEAN)"
+    # SQL text (checks/sqltext): the pass-through columns are computed in
+    # the projection; byte_len is an O(1) offsets read, no payload copy
+    df = df.selectExpr(
+        "part_id", "clip_id", "bytes", "sr_hz", "dur_ms", "codec",
+        f"{transcript_ok} AS transcript_ok", "octet_length(bytes) AS byte_len",
+    )
+    return audio.decode_pass(
+        df, INVARIANT_RESULT_SCHEMA, _snr_kernel, args=("clip_id", "sr_hz"),
+        fail=(None, False) + STATE_FAIL,
+    )
 
 
 def invariant_violations(results: DataFrame) -> DataFrame:

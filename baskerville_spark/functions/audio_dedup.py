@@ -27,6 +27,7 @@ this is a from-scratch extension for the audio graft cell.
 
 from __future__ import annotations
 
+import hashlib
 from typing import Iterator
 
 import numpy as np
@@ -34,9 +35,10 @@ import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from baskerville_spark import audio
-from baskerville_spark.functions.audio_quality import _opt_part_ids, _require_cols
+from baskerville_spark.functions.audio_quality import _per_clip
 
 FINGERPRINT_SCHEMA = T.StructType(
     [
@@ -46,17 +48,6 @@ FINGERPRINT_SCHEMA = T.StructType(
         T.StructField("decode_ok", T.BooleanType(), False),
         T.StructField("content_md5", T.StringType(), True),
         T.StructField("envelope_fp", T.LongType(), True),
-    ]
-)
-
-_ARROW_FP = pa.schema(
-    [
-        pa.field("part_id", pa.int32()),
-        pa.field("clip_id", pa.string()),
-        pa.field("codec", pa.string()),
-        pa.field("decode_ok", pa.bool_()),
-        pa.field("content_md5", pa.string()),
-        pa.field("envelope_fp", pa.int64()),
     ]
 )
 
@@ -101,45 +92,15 @@ def envelope_fingerprint(pcm: np.ndarray) -> int:
     return fp
 
 
-def _fp_batches(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-    import hashlib
-
-    for b in batches:
-        payloads = b.column(b.schema.get_field_index("bytes"))
-        codecs = b.column(b.schema.get_field_index("codec")).to_pylist()
-        clip_ids = b.column(b.schema.get_field_index("clip_id")).to_pylist()
-        part_ids = _opt_part_ids(b)
-        n = len(b)
-        oks = [False] * n
-        md5s: list[str | None] = [None] * n
-        fps: list[int | None] = [None] * n
-        for i in range(n):
-            pv = payloads[i]
-            payload = pv.as_py() if pv.is_valid else None
-            pcm = audio.decode(payload, codecs[i]) if payload is not None else None
-            if pcm is not None and len(pcm) > 0:
-                oks[i] = True
-                md5s[i] = hashlib.md5(pcm.astype("<i2").tobytes()).hexdigest()
-                fps[i] = envelope_fingerprint(pcm)
-        yield pa.RecordBatch.from_arrays(
-            [
-                part_ids,
-                pa.array(clip_ids, pa.string()),
-                pa.array(codecs, pa.string()),
-                pa.array(oks, pa.bool_()),
-                pa.array(md5s, pa.string()),
-                pa.array(fps, pa.int64()),
-            ],
-            schema=_ARROW_FP,
-        )
+def _fingerprints(pcm: np.ndarray) -> tuple:
+    md5 = hashlib.md5(pcm.astype("<i2").tobytes()).hexdigest()
+    return md5, envelope_fingerprint(pcm)
 
 
 def audio_content_fingerprints(clips: DataFrame) -> DataFrame:
     """(part_id, clip_id, codec, decode_ok, content_md5, envelope_fp) —
     one decode per payload, narrow rows out."""
-    _require_cols(clips, ("clip_id", "bytes", "codec"))
-    cols = [c for c in ("part_id", "clip_id", "bytes", "codec") if c in clips.columns]
-    return clips.select(*cols).mapInArrow(_fp_batches, schema=FINGERPRINT_SCHEMA)
+    return _per_clip(clips, FINGERPRINT_SCHEMA, _fingerprints)
 
 
 def reencode(clips: DataFrame, to_codec: str) -> DataFrame:
@@ -147,30 +108,10 @@ def reencode(clips: DataFrame, to_codec: str) -> DataFrame:
     pass, preserving all metadata columns. Rows whose payload fails to
     decode are dropped (they have no content to transcode)."""
 
-    out_schema = clips.schema
+    def _reenc(pcm: np.ndarray) -> list[dict]:
+        return [{"bytes": audio.encode(pcm, to_codec), "codec": to_codec}]
 
-    def _reenc(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for b in batches:
-            tbl = b.to_pydict()
-            keep = []
-            new_payloads = []
-            for i in range(len(b)):
-                payload, codec = tbl["bytes"][i], tbl["codec"][i]
-                pcm = audio.decode(payload, codec) if payload is not None else None
-                if pcm is None or len(pcm) == 0:
-                    continue
-                keep.append(i)
-                new_payloads.append(audio.encode(pcm, to_codec))
-            out = {
-                name: [tbl[name][i] for i in keep] for name in tbl if name != "bytes"
-            }
-            out["bytes"] = new_payloads
-            out["codec"] = [to_codec] * len(keep)
-            yield pa.RecordBatch.from_pydict(
-                {f.name: out[f.name] for f in b.schema}, schema=b.schema
-            )
-
-    return clips.mapInArrow(_reenc, schema=out_schema)
+    return audio.map_payloads(clips, _reenc)
 
 
 def content_duplicate_pairs(fps: DataFrame, exact: bool = True) -> DataFrame:
@@ -204,16 +145,6 @@ ALIGN_SCHEMA = T.StructType(
         T.StructField("match_ratio", T.DoubleType(), False),
     ]
 )
-
-_ARROW_ALIGN = pa.schema(
-    [
-        pa.field("base_id", pa.string()),
-        pa.field("twin_id", pa.string()),
-        pa.field("offset_samples", pa.int64()),
-        pa.field("match_ratio", pa.float64()),
-    ]
-)
-
 
 def audio_align_offsets(
     clips: DataFrame, candidates: DataFrame, frame: int = 64
@@ -261,6 +192,7 @@ def audio_align_offsets(
         .join(base_side, "base_id")
         .join(twin_side, "twin_id")
     )
+    arrow = to_arrow_schema(ALIGN_SCHEMA)
 
     def _align(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for b in batches:
@@ -305,7 +237,7 @@ def audio_align_offsets(
                 rows["twin_id"].append(tbl["twin_id"][i])
                 rows["offset_samples"].append(best_k)
                 rows["match_ratio"].append(float(best_dot) / float(aa))
-            yield pa.RecordBatch.from_pydict(rows, schema=_ARROW_ALIGN)
+            yield pa.RecordBatch.from_pydict(rows, schema=arrow)
 
     return joined.mapInArrow(_align, schema=ALIGN_SCHEMA)
 
@@ -333,7 +265,7 @@ def conflicting_label_groups(clips: DataFrame) -> DataFrame:
     (group_key, clip_id, n_labels) with group_key = min(clip_id) of the
     group — a deterministic name both engines can derive.
     """
-    _require_cols(clips, ("clip_id", "bytes", "codec", "transcript"))
+    audio.require_cols(clips, ("clip_id", "bytes", "codec", "transcript"))
     fps = audio_content_fingerprints(clips)
     # persist the narrow labeled frame: both the group aggregate and the
     # member back-join derive from it — unpersisted, the DECODE pass (the

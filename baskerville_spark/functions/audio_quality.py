@@ -1,11 +1,30 @@
-"""Audio loudness / clipping QA: per-clip level statistics.
+"""Audio QA operators: per-clip kernels over one shared Arrow decode pass.
 
 The standard audio-ingest QA trio — peak level, RMS level (both in dBFS,
 full scale = 32768 for int16), and clipped-sample detection (|x| at full
-scale) — computed in ONE Arrow pass over the payload column, narrow rows
-out, same decode discipline as the SNR invariant (checks/invariants.py).
-Flags the real-world ingest failures metadata checks can't see: silent
-uploads (rms ~ -inf), hot/clipped masters, gain-mismatched batches.
+scale) — plus spectral, DC, pitch, bandwidth, VAD and stereo screens, and
+the payload rewrites (resample, downmix, trim, normalize, segment). Flags
+the real-world ingest failures metadata checks can't see: silent uploads,
+hot/clipped masters, gain-mismatched batches.
+
+Every operator here is a per-clip numpy kernel plus one call into the
+Arrow boundary in ``baskerville_spark.audio`` — the same decode discipline
+as the SNR invariant (checks/invariants.py):
+
+- ``decode_pass`` emits one narrow row per clip. Schema fields the input
+  carries (``part_id``, ``clip_id``) pass through, cast to the declared
+  type; a missing ``part_id`` becomes typed NULLs. ``decode_ok`` is True
+  when the payload is non-NULL, decodes to at least one sample, and the
+  kernel accepts the clip — the pitch kernel rejects ``len <= min_lag``,
+  the balance kernel ``len < n_channels``. Rejected rows get ``fail``
+  (all NULL here), so a failed clip is reported, never dropped.
+- ``map_payloads`` rewrites or fans out rows with every other column
+  carried; clips without decodable samples, and clips the kernel returns
+  no rows for (all-silent trims, zero-length resamples), drop.
+
+Missing input columns raise ValueError at call time. Silent clips report
+NULL dBFS, never -inf (which breaks parquet/arrow round trips and every
+downstream comparison).
 
 Reference seam: Baskerville has no audio-signal operators (its features
 are request-set statistics); this is a from-scratch extension for the
@@ -28,6 +47,39 @@ from baskerville_spark import audio
 FULL_SCALE = 32768.0
 CLIP_LEVEL = 32767  # |sample| >= this counts as clipped
 
+
+def _per_clip(clips: DataFrame, schema: T.StructType, kernel) -> DataFrame:
+    """``audio.decode_pass`` over the clip's identity columns only, so an
+    input that already carries a metric column (``n_samples`` on
+    segmenter output) never shadows the kernel's own field."""
+    audio.require_cols(clips, ("clip_id",))
+    keys = [c for c in ("part_id", "clip_id", "codec", "bytes") if c in clips.columns]
+    return audio.decode_pass(clips.select(*keys), schema, kernel)
+
+
+def _dbfs(level: float) -> float | None:
+    return 20.0 * np.log10(level / FULL_SCALE) if level > 0 else None
+
+
+def _fft_window(pcm: np.ndarray, n_fft: int) -> np.ndarray:
+    """First ``n_fft`` samples as float64, zero-padded when shorter."""
+    x = pcm[:n_fft].astype(np.float64)
+    return np.pad(x, (0, n_fft - len(x)))
+
+
+def _utterance_spans(voiced: np.ndarray, min_gap: int) -> list[tuple[int, int]]:
+    """Voiced-to-voiced spans of the voiced sample indices, split at every
+    interior silence run of >= ``min_gap`` samples."""
+    gaps = np.flatnonzero(np.diff(voiced) - 1 >= min_gap)
+    starts = np.concatenate([[0], gaps + 1])
+    ends = np.concatenate([gaps, [len(voiced) - 1]])
+    return [(int(voiced[a]), int(voiced[b]) + 1) for a, b in zip(starts, ends)]
+
+
+def _voiced(pcm: np.ndarray, threshold: int) -> np.ndarray:
+    return np.flatnonzero(np.abs(pcm.astype(np.int32)) > threshold)
+
+
 LOUDNESS_SCHEMA = T.StructType(
     [
         T.StructField("part_id", T.IntegerType(), True),
@@ -40,87 +92,17 @@ LOUDNESS_SCHEMA = T.StructType(
     ]
 )
 
-_ARROW_LOUD = pa.schema(
-    [
-        pa.field("part_id", pa.int32()),
-        pa.field("clip_id", pa.string()),
-        pa.field("decode_ok", pa.bool_()),
-        pa.field("n_samples", pa.int64()),
-        pa.field("n_clipped", pa.int64()),
-        pa.field("peak_dbfs", pa.float64()),
-        pa.field("rms_dbfs", pa.float64()),
-    ]
-)
 
-
-def _require_cols(df: DataFrame, names: tuple[str, ...]) -> None:
-    """Fail loudly on a missing payload column: pyarrow's
-    ``get_field_index`` returns -1 for unknown names and ``column(-1)``
-    silently binds the LAST column — a schema mistake must read as an
-    error, never as "no data" or cross-bound garbage (round-5 review)."""
-    missing = [n for n in names if n not in df.columns]
-    if missing:
-        raise ValueError(
-            f"missing required column(s) {missing}; frame has {df.columns}"
-        )
-
-
-def _opt_part_ids(b: pa.RecordBatch) -> pa.Array:
-    """part_id column if present, else typed NULLs (never column(-1))."""
-    idx = b.schema.get_field_index("part_id")
-    return b.column(idx).cast(pa.int32()) if idx >= 0 else pa.nulls(
-        len(b), pa.int32()
-    )
-
-
-def _loudness_batches(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-    for b in batches:
-        payloads = b.column(b.schema.get_field_index("bytes"))
-        codecs = b.column(b.schema.get_field_index("codec")).to_pylist()
-        clip_ids = b.column(b.schema.get_field_index("clip_id")).to_pylist()
-        part_ids = _opt_part_ids(b)
-        n = len(b)
-        oks = [False] * n
-        n_samps: list[int | None] = [None] * n
-        n_clips: list[int | None] = [None] * n
-        peaks: list[float | None] = [None] * n
-        rmss: list[float | None] = [None] * n
-        for i in range(n):
-            pv = payloads[i]
-            payload = pv.as_py() if pv.is_valid else None
-            pcm = audio.decode(payload, codecs[i]) if payload is not None else None
-            if pcm is None or len(pcm) == 0:
-                continue
-            oks[i] = True
-            x = np.abs(pcm.astype(np.float64))
-            n_samps[i] = int(len(x))
-            n_clips[i] = int((x >= CLIP_LEVEL).sum())
-            peak = x.max()
-            rms = float(np.sqrt((x * x).mean()))
-            # silent clips: dBFS undefined -> NULL (not -inf, which breaks
-            # parquet/arrow round trips and every downstream comparison)
-            peaks[i] = 20.0 * np.log10(peak / FULL_SCALE) if peak > 0 else None
-            rmss[i] = 20.0 * np.log10(rms / FULL_SCALE) if rms > 0 else None
-        yield pa.RecordBatch.from_arrays(
-            [
-                part_ids,
-                pa.array(clip_ids, pa.string()),
-                pa.array(oks, pa.bool_()),
-                pa.array(n_samps, pa.int64()),
-                pa.array(n_clips, pa.int64()),
-                pa.array(peaks, pa.float64()),
-                pa.array(rmss, pa.float64()),
-            ],
-            schema=_ARROW_LOUD,
-        )
+def _loudness(pcm: np.ndarray) -> tuple:
+    x = np.abs(pcm.astype(np.float64))
+    rms = float(np.sqrt((x * x).mean()))
+    return len(x), int((x >= CLIP_LEVEL).sum()), _dbfs(x.max()), _dbfs(rms)
 
 
 def audio_loudness_stats(clips: DataFrame) -> DataFrame:
     """(part_id, clip_id, decode_ok, n_samples, n_clipped, peak_dbfs,
     rms_dbfs) — one decode per payload, narrow rows out."""
-    _require_cols(clips, ("clip_id", "bytes", "codec"))
-    cols = [c for c in ("part_id", "clip_id", "bytes", "codec") if c in clips.columns]
-    return clips.select(*cols).mapInArrow(_loudness_batches, schema=LOUDNESS_SCHEMA)
+    return _per_clip(clips, LOUDNESS_SCHEMA, _loudness)
 
 
 SPECTRAL_SCHEMA = T.StructType(
@@ -131,17 +113,6 @@ SPECTRAL_SCHEMA = T.StructType(
         T.StructField("n_samples", T.LongType(), True),
         T.StructField("dominant_bin", T.IntegerType(), True),
         T.StructField("spectral_centroid", T.DoubleType(), True),
-    ]
-)
-
-_ARROW_SPEC = pa.schema(
-    [
-        pa.field("part_id", pa.int32()),
-        pa.field("clip_id", pa.string()),
-        pa.field("decode_ok", pa.bool_()),
-        pa.field("n_samples", pa.int64()),
-        pa.field("dominant_bin", pa.int32()),
-        pa.field("spectral_centroid", pa.float64()),
     ]
 )
 
@@ -158,50 +129,14 @@ def audio_spectral_features(clips: DataFrame, n_fft: int = 256) -> DataFrame:
     constant per row, independent of clip length), narrow rows out.
     """
 
-    _require_cols(clips, ("clip_id", "bytes", "codec"))
+    def _spec(pcm: np.ndarray) -> tuple:
+        mag = np.abs(np.fft.rfft(_fft_window(pcm, n_fft)))[1:]  # drop DC
+        if mag.sum() <= 0:
+            return len(pcm), None, None  # silent: bins stay NULL
+        k = np.arange(1, len(mag) + 1, dtype=np.float64)
+        return len(pcm), int(mag.argmax()) + 1, float((k * mag).sum() / mag.sum())
 
-    def _spec(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for b in batches:
-            payloads = b.column(b.schema.get_field_index("bytes"))
-            codecs = b.column(b.schema.get_field_index("codec")).to_pylist()
-            clip_ids = b.column(b.schema.get_field_index("clip_id")).to_pylist()
-            part_ids = _opt_part_ids(b)
-            n = len(b)
-            oks = [False] * n
-            n_samps: list[int | None] = [None] * n
-            bins: list[int | None] = [None] * n
-            cents: list[float | None] = [None] * n
-            for i in range(n):
-                pv = payloads[i]
-                payload = pv.as_py() if pv.is_valid else None
-                pcm = audio.decode(payload, codecs[i]) if payload is not None else None
-                if pcm is None or len(pcm) == 0:
-                    continue
-                oks[i] = True
-                n_samps[i] = int(len(pcm))
-                x = pcm[:n_fft].astype(np.float64)
-                if len(x) < n_fft:
-                    x = np.concatenate([x, np.zeros(n_fft - len(x))])
-                mag = np.abs(np.fft.rfft(x))[1:]  # drop DC
-                if mag.sum() <= 0:
-                    continue  # silent: bins stay NULL
-                bins[i] = int(mag.argmax()) + 1
-                k = np.arange(1, len(mag) + 1, dtype=np.float64)
-                cents[i] = float((k * mag).sum() / mag.sum())
-            yield pa.RecordBatch.from_arrays(
-                [
-                    part_ids,
-                    pa.array(clip_ids, pa.string()),
-                    pa.array(oks, pa.bool_()),
-                    pa.array(n_samps, pa.int64()),
-                    pa.array(bins, pa.int32()),
-                    pa.array(cents, pa.float64()),
-                ],
-                schema=_ARROW_SPEC,
-            )
-
-    cols = [c for c in ("part_id", "clip_id", "bytes", "codec") if c in clips.columns]
-    return clips.select(*cols).mapInArrow(_spec, schema=SPECTRAL_SCHEMA)
+    return _per_clip(clips, SPECTRAL_SCHEMA, _spec)
 
 
 DC_SCHEMA = T.StructType(
@@ -214,15 +149,9 @@ DC_SCHEMA = T.StructType(
     ]
 )
 
-_ARROW_DC = pa.schema(
-    [
-        pa.field("part_id", pa.int32()),
-        pa.field("clip_id", pa.string()),
-        pa.field("decode_ok", pa.bool_()),
-        pa.field("n_samples", pa.int64()),
-        pa.field("dc_mean", pa.float64()),
-    ]
-)
+
+def _dc(pcm: np.ndarray) -> tuple:
+    return len(pcm), float(pcm.astype(np.float64).mean())
 
 
 def audio_dc_offset(clips: DataFrame, suspect_frac: float = 0.02) -> DataFrame:
@@ -244,40 +173,7 @@ def audio_dc_offset(clips: DataFrame, suspect_frac: float = 0.02) -> DataFrame:
     a from-scratch extension for the audio graft cell, gated analytically
     (q131: square-wave clips around a known bias, exact closed-form mean).
     """
-    _require_cols(clips, ("clip_id", "bytes", "codec"))
-
-    def _dc(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for b in batches:
-            payloads = b.column(b.schema.get_field_index("bytes"))
-            codecs = b.column(b.schema.get_field_index("codec")).to_pylist()
-            clip_ids = b.column(b.schema.get_field_index("clip_id")).to_pylist()
-            part_ids = _opt_part_ids(b)
-            n = len(b)
-            oks = [False] * n
-            n_samps: list[int | None] = [None] * n
-            means: list[float | None] = [None] * n
-            for i in range(n):
-                pv = payloads[i]
-                payload = pv.as_py() if pv.is_valid else None
-                pcm = audio.decode(payload, codecs[i]) if payload is not None else None
-                if pcm is None or len(pcm) == 0:
-                    continue
-                oks[i] = True
-                n_samps[i] = int(len(pcm))
-                means[i] = float(pcm.astype(np.float64).mean())
-            yield pa.RecordBatch.from_arrays(
-                [
-                    part_ids,
-                    pa.array(clip_ids, pa.string()),
-                    pa.array(oks, pa.bool_()),
-                    pa.array(n_samps, pa.int64()),
-                    pa.array(means, pa.float64()),
-                ],
-                schema=_ARROW_DC,
-            )
-
-    cols = [c for c in ("part_id", "clip_id", "bytes", "codec") if c in clips.columns]
-    out = clips.select(*cols).mapInArrow(_dc, schema=DC_SCHEMA)
+    out = _per_clip(clips, DC_SCHEMA, _dc)
     dc_frac = F.col("dc_mean") / F.lit(FULL_SCALE)
     return out.withColumn("dc_frac", dc_frac).withColumn(
         "dc_suspect", F.abs(F.col("dc_frac")) > F.lit(float(suspect_frac))
@@ -287,7 +183,9 @@ def audio_dc_offset(clips: DataFrame, suspect_frac: float = 0.02) -> DataFrame:
 def audio_resample(clips: DataFrame, target_sr: int) -> DataFrame:
     """Resample payloads to ``target_sr`` by linear interpolation over the
     new time grid (new_n = n·target/orig, floor) in one Arrow pass,
-    re-encoding under each row's codec and updating ``sr_hz``.
+    re-encoding under each row's codec and updating ``sr_hz``. A missing
+    ``sr_hz`` column raises (it would otherwise read as "no data"); rows
+    with a NULL or non-positive rate drop.
 
     HONEST DSP NOTE: linear interpolation with no anti-alias low-pass —
     content above the new Nyquist aliases, exactly like naive decimation.
@@ -297,49 +195,21 @@ def audio_resample(clips: DataFrame, target_sr: int) -> DataFrame:
     and gated. Integer downsample ratios are EXACT (the grid hits original
     samples), which is what the q85 gate exploits.
     """
-    if "sr_hz" not in clips.columns:
-        # without this, a missing sr_hz column silently dropped EVERY row —
-        # a schema mistake read as "no data" (round-4 advisor finding).
-        # Silent drops remain only for genuinely undecodable/NULL-rate rows.
-        raise ValueError(
-            "audio_resample requires an 'sr_hz' column "
-            f"(got columns {clips.columns})"
-        )
 
-    def _res(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for b in batches:
-            tbl = b.to_pydict()
-            keep, new_payloads, new_srs = [], [], []
-            for i in range(len(b)):
-                payload, codec = tbl["bytes"][i], tbl["codec"][i]
-                sr = tbl.get("sr_hz", [None] * len(b))[i]
-                pcm = audio.decode(payload, codec) if payload is not None else None
-                if pcm is None or len(pcm) == 0 or not sr or sr <= 0:
-                    continue
-                n = len(pcm)
-                new_n = (n * target_sr) // int(sr)
-                if new_n <= 0:
-                    continue
-                src_t = np.arange(n, dtype=np.float64)
-                dst_t = np.arange(new_n, dtype=np.float64) * (int(sr) / target_sr)
-                res = np.interp(dst_t, src_t, pcm.astype(np.float64))
-                out_pcm = np.clip(np.rint(res), -32768, 32767).astype(np.int16)
-                keep.append(i)
-                new_payloads.append(audio.encode(out_pcm, codec))
-                new_srs.append(target_sr)
-            out = {
-                name: [tbl[name][i] for i in keep]
-                for name in tbl
-                if name not in ("bytes", "sr_hz")
-            }
-            out["bytes"] = new_payloads
-            if "sr_hz" in tbl:
-                out["sr_hz"] = new_srs
-            yield pa.RecordBatch.from_pydict(
-                {f.name: out[f.name] for f in b.schema}, schema=b.schema
-            )
+    def _res(pcm: np.ndarray, codec: str, sr: int | None) -> list[dict]:
+        if not sr or sr <= 0:
+            return []
+        n = len(pcm)
+        new_n = (n * target_sr) // int(sr)
+        if new_n <= 0:
+            return []
+        src_t = np.arange(n, dtype=np.float64)
+        dst_t = np.arange(new_n, dtype=np.float64) * (int(sr) / target_sr)
+        res = np.interp(dst_t, src_t, pcm.astype(np.float64))
+        out_pcm = np.clip(np.rint(res), -32768, 32767).astype(np.int16)
+        return [{"bytes": audio.encode(out_pcm, codec), "sr_hz": target_sr}]
 
-    return clips.mapInArrow(_res, schema=clips.schema)
+    return audio.map_payloads(clips, _res, args=("codec", "sr_hz"))
 
 
 def audio_downmix(clips: DataFrame, n_channels: int = 2) -> DataFrame:
@@ -354,30 +224,16 @@ def audio_downmix(clips: DataFrame, n_channels: int = 2) -> DataFrame:
     that FEEDS that schema from multi-channel masters.
     """
 
-    def _mix(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for b in batches:
-            tbl = b.to_pydict()
-            keep, new_payloads = [], []
-            for i in range(len(b)):
-                payload, codec = tbl["bytes"][i], tbl["codec"][i]
-                pcm = audio.decode(payload, codec) if payload is not None else None
-                if pcm is None or len(pcm) < n_channels:
-                    continue
-                frames = len(pcm) // n_channels
-                x = pcm[: frames * n_channels].astype(np.float64)
-                mono = np.rint(x.reshape(frames, n_channels).mean(axis=1))
-                out_pcm = np.clip(mono, -32768, 32767).astype(np.int16)
-                keep.append(i)
-                new_payloads.append(audio.encode(out_pcm, codec))
-            out = {
-                name: [tbl[name][i] for i in keep] for name in tbl if name != "bytes"
-            }
-            out["bytes"] = new_payloads
-            yield pa.RecordBatch.from_pydict(
-                {f.name: out[f.name] for f in b.schema}, schema=b.schema
-            )
+    def _mix(pcm: np.ndarray, codec: str) -> list[dict]:
+        if len(pcm) < n_channels:
+            return []
+        frames = len(pcm) // n_channels
+        x = pcm[: frames * n_channels].astype(np.float64)
+        mono = np.rint(x.reshape(frames, n_channels).mean(axis=1))
+        out_pcm = np.clip(mono, -32768, 32767).astype(np.int16)
+        return [{"bytes": audio.encode(out_pcm, codec)}]
 
-    return clips.mapInArrow(_mix, schema=clips.schema)
+    return audio.map_payloads(clips, _mix, args=("codec",))
 
 
 def audio_trim_silence(clips: DataFrame, threshold: int = 100) -> DataFrame:
@@ -386,30 +242,13 @@ def audio_trim_silence(clips: DataFrame, threshold: int = 100) -> DataFrame:
     All-silent clips are dropped (nothing left to keep). Interior silence
     is untouched — this is an endpoint trim, not a VAD."""
 
-    def _trim(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for b in batches:
-            tbl = b.to_pydict()
-            keep, new_payloads = [], []
-            for i in range(len(b)):
-                payload, codec = tbl["bytes"][i], tbl["codec"][i]
-                pcm = audio.decode(payload, codec) if payload is not None else None
-                if pcm is None or len(pcm) == 0:
-                    continue
-                loud = np.flatnonzero(np.abs(pcm.astype(np.int32)) > threshold)
-                if len(loud) == 0:
-                    continue
-                trimmed = pcm[loud[0]: loud[-1] + 1]
-                keep.append(i)
-                new_payloads.append(audio.encode(trimmed, codec))
-            out = {
-                name: [tbl[name][i] for i in keep] for name in tbl if name != "bytes"
-            }
-            out["bytes"] = new_payloads
-            yield pa.RecordBatch.from_pydict(
-                {f.name: out[f.name] for f in b.schema}, schema=b.schema
-            )
+    def _trim(pcm: np.ndarray, codec: str) -> list[dict]:
+        loud = _voiced(pcm, threshold)
+        if len(loud) == 0:
+            return []
+        return [{"bytes": audio.encode(pcm[loud[0]: loud[-1] + 1], codec)}]
 
-    return clips.mapInArrow(_trim, schema=clips.schema)
+    return audio.map_payloads(clips, _trim, args=("codec",))
 
 
 def audio_normalize(clips: DataFrame, target_peak: int = 20000) -> DataFrame:
@@ -425,33 +264,17 @@ def audio_normalize(clips: DataFrame, target_peak: int = 20000) -> DataFrame:
     q90 gate pins through the real decode→scale→encode pipeline.
     """
 
-    def _norm(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for b in batches:
-            tbl = b.to_pydict()
-            keep, new_payloads = [], []
-            for i in range(len(b)):
-                payload, codec = tbl["bytes"][i], tbl["codec"][i]
-                pcm = audio.decode(payload, codec) if payload is not None else None
-                if pcm is None or len(pcm) == 0:
-                    continue
-                peak = int(np.abs(pcm.astype(np.int32)).max())
-                if peak == 0:
-                    continue
-                gain = float(target_peak) / peak
-                out_pcm = np.clip(
-                    np.rint(pcm.astype(np.float64) * gain), -32768, 32767
-                ).astype(np.int16)
-                keep.append(i)
-                new_payloads.append(audio.encode(out_pcm, codec))
-            out = {
-                name: [tbl[name][i] for i in keep] for name in tbl if name != "bytes"
-            }
-            out["bytes"] = new_payloads
-            yield pa.RecordBatch.from_pydict(
-                {f.name: out[f.name] for f in b.schema}, schema=b.schema
-            )
+    def _norm(pcm: np.ndarray, codec: str) -> list[dict]:
+        peak = int(np.abs(pcm.astype(np.int32)).max())
+        if peak == 0:
+            return []
+        gain = float(target_peak) / peak
+        out_pcm = np.clip(
+            np.rint(pcm.astype(np.float64) * gain), -32768, 32767
+        ).astype(np.int16)
+        return [{"bytes": audio.encode(out_pcm, codec)}]
 
-    return clips.mapInArrow(_norm, schema=clips.schema)
+    return audio.map_payloads(clips, _norm, args=("codec",))
 
 
 def audio_overlay(clips: DataFrame, overlays: DataFrame) -> DataFrame:
@@ -535,15 +358,6 @@ PITCH_SCHEMA = T.StructType(
     ]
 )
 
-_ARROW_PITCH = pa.schema(
-    [
-        pa.field("part_id", pa.int32()),
-        pa.field("clip_id", pa.string()),
-        pa.field("decode_ok", pa.bool_()),
-        pa.field("period_samples", pa.int32()),
-    ]
-)
-
 
 def audio_pitch_period(
     clips: DataFrame, min_lag: int = 2, max_lag: int = 64, window: int = 512
@@ -552,6 +366,8 @@ def audio_pitch_period(
     over the first ``window`` samples, argmax lag in [min_lag, max_lag]
     (ties -> smallest lag, i.e. the fundamental, not a harmonic multiple).
     The screen for mislabeled sample rates and tone-like junk uploads.
+    Clips of ``min_lag`` samples or fewer have no lag to test and report
+    ``decode_ok`` False.
 
     Cost is O(window * max_lag) integer MACs per clip — constant per row,
     independent of clip length; at scale the FFT form (O(W log W) via
@@ -560,43 +376,18 @@ def audio_pitch_period(
     q92 gate pin the argmax against the planted square-wave period.
     """
 
-    def _pitch(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for b in batches:
-            payloads = b.column(b.schema.get_field_index("bytes"))
-            codecs = b.column(b.schema.get_field_index("codec")).to_pylist()
-            clip_ids = b.column(b.schema.get_field_index("clip_id")).to_pylist()
-            part_ids = _opt_part_ids(b)
-            n = len(b)
-            oks = [False] * n
-            periods: list[int | None] = [None] * n
-            for i in range(n):
-                pv = payloads[i]
-                payload = pv.as_py() if pv.is_valid else None
-                pcm = audio.decode(payload, codecs[i]) if payload is not None else None
-                if pcm is None or len(pcm) <= min_lag:
-                    continue
-                oks[i] = True
-                x = pcm[:window].astype(np.int64)
-                hi = min(max_lag, len(x) - 1)
-                best_lag, best_r = None, None
-                for lag in range(min_lag, hi + 1):
-                    r = int(np.dot(x[:-lag], x[lag:]))
-                    if best_r is None or r > best_r:
-                        best_r, best_lag = r, lag
-                periods[i] = best_lag
-            yield pa.RecordBatch.from_arrays(
-                [
-                    part_ids,
-                    pa.array(clip_ids, pa.string()),
-                    pa.array(oks, pa.bool_()),
-                    pa.array(periods, pa.int32()),
-                ],
-                schema=_ARROW_PITCH,
-            )
+    def _pitch(pcm: np.ndarray) -> tuple | None:
+        if len(pcm) <= min_lag:
+            return None
+        x = pcm[:window].astype(np.int64)
+        best_lag, best_r = None, None
+        for lag in range(min_lag, min(max_lag, len(x) - 1) + 1):
+            r = int(np.dot(x[:-lag], x[lag:]))
+            if best_r is None or r > best_r:
+                best_r, best_lag = r, lag
+        return (best_lag,)
 
-    _require_cols(clips, ("clip_id", "bytes", "codec"))
-    cols = [c for c in ("part_id", "clip_id", "bytes", "codec") if c in clips.columns]
-    return clips.select(*cols).mapInArrow(_pitch, schema=PITCH_SCHEMA)
+    return _per_clip(clips, PITCH_SCHEMA, _pitch)
 
 
 SEGMENT_SCHEMA_SUFFIX = [
@@ -606,14 +397,12 @@ SEGMENT_SCHEMA_SUFFIX = [
 
 
 def _emit_spans(clips: DataFrame, span_fn) -> DataFrame:
-    """Shared fan-out machinery for clip-side segmentation ops: decode each
-    payload once, let ``span_fn(pcm) -> [(start, end_exclusive), ...]``
-    choose the spans, and emit one OUTPUT ROW per span — metadata carried,
-    ``seg_idx``/``n_samples`` appended, each span re-encoded under the
-    row's codec. Undecodable rows and empty span lists drop. Data-dependent
-    fan-out, still a narrow map-side op, no shuffle. ONE copy of the Arrow
-    emission scaffolding so segmenters can't diverge on schema/null
-    handling."""
+    """Shared fan-out for clip-side segmentation ops: ``span_fn(pcm) ->
+    [(start, end_exclusive), ...]`` chooses the spans, and each becomes one
+    OUTPUT ROW — metadata carried, ``seg_idx``/``n_samples`` appended, the
+    span re-encoded under the row's codec. Undecodable rows and empty span
+    lists drop. Data-dependent fan-out, still a narrow map-side op, no
+    shuffle."""
     clash = {"seg_idx", "n_samples"} & set(clips.columns)
     if clash:
         # re-segmenting a segmenter's own output would otherwise build an
@@ -625,37 +414,15 @@ def _emit_spans(clips: DataFrame, span_fn) -> DataFrame:
             "rename or drop them before re-segmenting"
         )
 
+    def _emit(pcm: np.ndarray, codec: str) -> list[dict]:
+        return [
+            {"bytes": audio.encode(pcm[s:e], codec), "seg_idx": k,
+             "n_samples": len(pcm[s:e])}
+            for k, (s, e) in enumerate(span_fn(pcm))
+        ]
+
     out_schema = T.StructType(clips.schema.fields + SEGMENT_SCHEMA_SUFFIX)
-
-    def _emit(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for b in batches:
-            tbl = b.to_pydict()
-            names = [f.name for f in b.schema]
-            rows: dict[str, list] = {n: [] for n in names}
-            rows["seg_idx"] = []
-            rows["n_samples"] = []
-            for i in range(len(b)):
-                payload, codec = tbl["bytes"][i], tbl["codec"][i]
-                pcm = audio.decode(payload, codec) if payload is not None else None
-                if pcm is None or len(pcm) == 0:
-                    continue
-                for k, (s, e) in enumerate(span_fn(pcm)):
-                    seg = pcm[s:e]
-                    for n in names:
-                        rows[n].append(
-                            audio.encode(seg, codec) if n == "bytes" else tbl[n][i]
-                        )
-                    rows["seg_idx"].append(k)
-                    rows["n_samples"].append(len(seg))
-            schema = pa.schema(
-                list(b.schema)
-                + [pa.field("seg_idx", pa.int32()), pa.field("n_samples", pa.int64())]
-            )
-            yield pa.RecordBatch.from_pydict(
-                {f.name: rows[f.name] for f in schema}, schema=schema
-            )
-
-    return clips.mapInArrow(_emit, schema=out_schema)
+    return audio.map_payloads(clips, _emit, out_schema, args=("codec",))
 
 
 def audio_segment(clips: DataFrame, segment_samples: int) -> DataFrame:
@@ -688,17 +455,8 @@ def audio_split_on_silence(
     data-dependent-fan-out shape as audio_segment."""
 
     def spans(pcm):
-        voiced = np.flatnonzero(np.abs(pcm.astype(np.int32)) > threshold)
-        if len(voiced) == 0:
-            return []
-        # split between consecutive voiced samples separated by a
-        # qualifying silence run; segments span voiced-to-voiced
-        gaps = np.flatnonzero(np.diff(voiced) - 1 >= min_gap)
-        starts = np.concatenate([[0], gaps + 1])
-        ends = np.concatenate([gaps, [len(voiced) - 1]])
-        return [
-            (int(voiced[a]), int(voiced[b]) + 1) for a, b in zip(starts, ends)
-        ]
+        voiced = _voiced(pcm, threshold)
+        return _utterance_spans(voiced, min_gap) if len(voiced) else []
 
     return _emit_spans(clips, spans)
 
@@ -754,15 +512,6 @@ BANDWIDTH_SCHEMA = T.StructType(
     ]
 )
 
-_ARROW_BW = pa.schema(
-    [
-        pa.field("clip_id", pa.string()),
-        pa.field("decode_ok", pa.bool_()),
-        pa.field("rolloff_bin", pa.int32()),
-        pa.field("band_frac", pa.float64()),
-    ]
-)
-
 
 def audio_bandwidth(
     clips: DataFrame, n_fft: int = 256, energy_frac: float = 0.99
@@ -781,47 +530,17 @@ def audio_bandwidth(
     clip, narrow rows out; threshold/verdict joins stay Column algebra
     downstream. Silent clips keep NULL rolloff (no energy to place).
     """
-    _require_cols(clips, ("clip_id", "bytes", "codec"))
     half = n_fft // 2
 
-    def _bw(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for b in batches:
-            payloads = b.column(b.schema.get_field_index("bytes"))
-            codecs = b.column(b.schema.get_field_index("codec")).to_pylist()
-            clip_ids = b.column(b.schema.get_field_index("clip_id")).to_pylist()
-            n = len(b)
-            oks = [False] * n
-            roll: list[int | None] = [None] * n
-            frac: list[float | None] = [None] * n
-            for i in range(n):
-                pv = payloads[i]
-                payload = pv.as_py() if pv.is_valid else None
-                pcm = audio.decode(payload, codecs[i]) if payload is not None else None
-                if pcm is None or len(pcm) == 0:
-                    continue
-                oks[i] = True
-                x = pcm[:n_fft].astype(np.float64)
-                if len(x) < n_fft:
-                    x = np.concatenate([x, np.zeros(n_fft - len(x))])
-                e = np.abs(np.fft.rfft(x)[1:]) ** 2  # DC excluded
-                total = e.sum()
-                if total <= 0:
-                    continue  # silent: rolloff stays NULL
-                j = int(np.searchsorted(np.cumsum(e), energy_frac * total)) + 1
-                roll[i] = j
-                frac[i] = j / half
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(clip_ids, pa.string()),
-                    pa.array(oks, pa.bool_()),
-                    pa.array(roll, pa.int32()),
-                    pa.array(frac, pa.float64()),
-                ],
-                schema=_ARROW_BW,
-            )
+    def _bw(pcm: np.ndarray) -> tuple:
+        e = np.abs(np.fft.rfft(_fft_window(pcm, n_fft))[1:]) ** 2  # DC excluded
+        total = e.sum()
+        if total <= 0:
+            return None, None  # silent: rolloff stays NULL
+        j = int(np.searchsorted(np.cumsum(e), energy_frac * total)) + 1
+        return j, j / half
 
-    cols = [c for c in ("clip_id", "bytes", "codec") if c in clips.columns]
-    return clips.select(*cols).mapInArrow(_bw, schema=BANDWIDTH_SCHEMA)
+    return _per_clip(clips, BANDWIDTH_SCHEMA, _bw)
 
 
 VAD_SCHEMA = T.StructType(
@@ -833,18 +552,6 @@ VAD_SCHEMA = T.StructType(
         T.StructField("speech_samples", T.LongType(), True),
         T.StructField("speech_frac", T.DoubleType(), True),
         T.StructField("longest_gap", T.LongType(), True),
-    ]
-)
-
-_ARROW_VAD = pa.schema(
-    [
-        pa.field("clip_id", pa.string()),
-        pa.field("decode_ok", pa.bool_()),
-        pa.field("n_samples", pa.int64()),
-        pa.field("n_utterances", pa.int32()),
-        pa.field("speech_samples", pa.int64()),
-        pa.field("speech_frac", pa.float64()),
-        pa.field("longest_gap", pa.int64()),
     ]
 )
 
@@ -865,56 +572,17 @@ def audio_vad_stats(
     splitter, a summary must account for every clip).
     """
 
-    def _vad(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for b in batches:
-            payloads = b.column(b.schema.get_field_index("bytes"))
-            codecs = b.column(b.schema.get_field_index("codec")).to_pylist()
-            clip_ids = b.column(b.schema.get_field_index("clip_id")).to_pylist()
-            n = len(b)
-            oks = [False] * n
-            ns: list[int | None] = [None] * n
-            utts: list[int | None] = [None] * n
-            speech: list[int | None] = [None] * n
-            frac: list[float | None] = [None] * n
-            gap: list[int | None] = [None] * n
-            for i in range(n):
-                pv = payloads[i]
-                payload = pv.as_py() if pv.is_valid else None
-                pcm = audio.decode(payload, codecs[i]) if payload is not None else None
-                if pcm is None or len(pcm) == 0:
-                    continue
-                oks[i] = True
-                ns[i] = len(pcm)
-                voiced = np.flatnonzero(np.abs(pcm.astype(np.int32)) > threshold)
-                if len(voiced) == 0:
-                    utts[i], speech[i], frac[i], gap[i] = 0, 0, 0.0, 0
-                    continue
-                runs = np.diff(voiced) - 1          # interior silence lengths
-                gap[i] = int(runs.max()) if len(runs) else 0
-                cuts = np.flatnonzero(runs >= min_gap)
-                starts = np.concatenate([[0], cuts + 1])
-                ends = np.concatenate([cuts, [len(voiced) - 1]])
-                utts[i] = len(starts)
-                speech[i] = int(
-                    sum(voiced[b_] - voiced[a_] + 1 for a_, b_ in zip(starts, ends))
-                )
-                frac[i] = speech[i] / ns[i]
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(clip_ids, pa.string()),
-                    pa.array(oks, pa.bool_()),
-                    pa.array(ns, pa.int64()),
-                    pa.array(utts, pa.int32()),
-                    pa.array(speech, pa.int64()),
-                    pa.array(frac, pa.float64()),
-                    pa.array(gap, pa.int64()),
-                ],
-                schema=_ARROW_VAD,
-            )
+    def _vad(pcm: np.ndarray) -> tuple:
+        n = len(pcm)
+        voiced = _voiced(pcm, threshold)
+        if len(voiced) == 0:
+            return n, 0, 0, 0.0, 0
+        runs = np.diff(voiced) - 1  # interior silence lengths
+        spans = _utterance_spans(voiced, min_gap)
+        speech = sum(e - s for s, e in spans)
+        return n, len(spans), speech, speech / n, int(runs.max()) if len(runs) else 0
 
-    _require_cols(clips, ("clip_id", "bytes", "codec"))
-    cols = [c for c in ("clip_id", "bytes", "codec") if c in clips.columns]
-    return clips.select(*cols).mapInArrow(_vad, schema=VAD_SCHEMA)
+    return _per_clip(clips, VAD_SCHEMA, _vad)
 
 
 BALANCE_SCHEMA = T.StructType(
@@ -930,19 +598,6 @@ BALANCE_SCHEMA = T.StructType(
     ]
 )
 
-_ARROW_BAL = pa.schema(
-    [
-        pa.field("part_id", pa.int32()),
-        pa.field("clip_id", pa.string()),
-        pa.field("decode_ok", pa.bool_()),
-        pa.field("n_frames", pa.int64()),
-        pa.field("rms_l_dbfs", pa.float64()),
-        pa.field("rms_r_dbfs", pa.float64()),
-        pa.field("balance_db", pa.float64()),
-        pa.field("corr_lr", pa.float64()),
-    ]
-)
-
 
 def audio_channel_balance(clips: DataFrame, n_channels: int = 2) -> DataFrame:
     """Stereo QA over interleaved multi-channel payloads: per-clip L/R RMS
@@ -953,16 +608,16 @@ def audio_channel_balance(clips: DataFrame, n_channels: int = 2) -> DataFrame:
     (corr ≈ −1), and fake stereo (mono duplicated into both channels,
     corr ≈ +1 with balance ≈ 0). Channels beyond the first two are
     ignored for the pair metrics; a trailing partial frame is truncated
-    (same tolerant-reader rule as audio_downmix). Silent channels emit
-    NULL dBFS (never −inf); zero-variance channels emit NULL corr (the
-    statistic is undefined, not 0).
+    (same tolerant-reader rule as audio_downmix); clips shorter than one
+    frame report ``decode_ok`` False. Silent channels emit NULL dBFS
+    (never −inf); zero-variance channels emit NULL corr (the statistic is
+    undefined, not 0).
 
     One Arrow decode pass, narrow rows out. Reference seam: Baskerville
     has no audio-signal operators; from-scratch for the audio graft cell,
     gated analytically (q134: ±square-wave channel pairs whose RMS,
     balance and correlation are exact closed forms).
     """
-    _require_cols(clips, ("clip_id", "bytes", "codec"))
     if n_channels < 2:
         # fail at call time, not as an opaque IndexError inside the Arrow
         # worker on the first decodable clip (x[:, 1] needs two channels)
@@ -970,54 +625,18 @@ def audio_channel_balance(clips: DataFrame, n_channels: int = 2) -> DataFrame:
             f"audio_channel_balance needs n_channels >= 2, got {n_channels}"
         )
 
-    def _bal(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for b in batches:
-            payloads = b.column(b.schema.get_field_index("bytes"))
-            codecs = b.column(b.schema.get_field_index("codec")).to_pylist()
-            clip_ids = b.column(b.schema.get_field_index("clip_id")).to_pylist()
-            part_ids = _opt_part_ids(b)
-            n = len(b)
-            oks = [False] * n
-            frames: list[int | None] = [None] * n
-            rls: list[float | None] = [None] * n
-            rrs: list[float | None] = [None] * n
-            bals: list[float | None] = [None] * n
-            corrs: list[float | None] = [None] * n
-            for i in range(n):
-                pv = payloads[i]
-                payload = pv.as_py() if pv.is_valid else None
-                pcm = audio.decode(payload, codecs[i]) if payload is not None else None
-                if pcm is None or len(pcm) < n_channels:
-                    continue
-                oks[i] = True
-                nf = len(pcm) // n_channels
-                x = pcm[: nf * n_channels].astype(np.float64).reshape(nf, n_channels)
-                left, right = x[:, 0], x[:, 1]
-                frames[i] = int(nf)
-                rms_l = float(np.sqrt((left * left).mean()))
-                rms_r = float(np.sqrt((right * right).mean()))
-                db_l = 20.0 * np.log10(rms_l / FULL_SCALE) if rms_l > 0 else None
-                db_r = 20.0 * np.log10(rms_r / FULL_SCALE) if rms_r > 0 else None
-                rls[i], rrs[i] = db_l, db_r
-                if db_l is not None and db_r is not None:
-                    bals[i] = db_l - db_r
-                lc, rc = left - left.mean(), right - right.mean()
-                den = float(np.sqrt((lc * lc).sum() * (rc * rc).sum()))
-                if den > 0:
-                    corrs[i] = float((lc * rc).sum() / den)
-            yield pa.RecordBatch.from_arrays(
-                [
-                    part_ids,
-                    pa.array(clip_ids, pa.string()),
-                    pa.array(oks, pa.bool_()),
-                    pa.array(frames, pa.int64()),
-                    pa.array(rls, pa.float64()),
-                    pa.array(rrs, pa.float64()),
-                    pa.array(bals, pa.float64()),
-                    pa.array(corrs, pa.float64()),
-                ],
-                schema=_ARROW_BAL,
-            )
+    def _bal(pcm: np.ndarray) -> tuple | None:
+        if len(pcm) < n_channels:
+            return None
+        nf = len(pcm) // n_channels
+        x = pcm[: nf * n_channels].astype(np.float64).reshape(nf, n_channels)
+        left, right = x[:, 0], x[:, 1]
+        db_l = _dbfs(float(np.sqrt((left * left).mean())))
+        db_r = _dbfs(float(np.sqrt((right * right).mean())))
+        bal = db_l - db_r if db_l is not None and db_r is not None else None
+        lc, rc = left - left.mean(), right - right.mean()
+        den = float(np.sqrt((lc * lc).sum() * (rc * rc).sum()))
+        corr = float((lc * rc).sum() / den) if den > 0 else None
+        return nf, db_l, db_r, bal, corr
 
-    cols = [c for c in ("part_id", "clip_id", "bytes", "codec") if c in clips.columns]
-    return clips.select(*cols).mapInArrow(_bal, schema=BALANCE_SCHEMA)
+    return _per_clip(clips, BALANCE_SCHEMA, _bal)

@@ -6,7 +6,7 @@ Query-lifecycle parity with the reference's fixed step DAG
 DataFrame plans:
 
   schema-enforce → [stats agg | uniqueness agg | RI anti-join |
-                    drift agg | audio-invariant mapInPandas] → verdicts/violations
+                    drift agg | audio-invariant mapInArrow] → verdicts/violations
 
 Scale design (100 TB):
 - ONE payload-free projection of the fact table is materialized and feeds
@@ -485,6 +485,14 @@ def run_resumable(
         all_parts = {
             r["part_id"] for r in clips.select("part_id").distinct().collect()
         }
+    if None in all_parts:
+        # a NULL part_id lands in the __HIVE_DEFAULT_PARTITION__ directory;
+        # the manifest ledger keys on an int part_id and cannot commit it
+        raise ValueError(
+            f"clip table {clips_path!r} has rows with a NULL part_id (the "
+            "__HIVE_DEFAULT_PARTITION__ partition); assign every clip a "
+            "part_id before a resumable run"
+        )
     done = manifest_mod.done_partitions(spark, manifest_path)
     pending = sorted(all_parts - done)
     if not pending:

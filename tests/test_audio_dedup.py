@@ -603,14 +603,28 @@ def test_audio_dc_offset(spark):
                              suspect_frac=0.005).collect()}
     assert tight["small"]["dc_suspect"]
 
-    # missing required column fails loudly (shared _require_cols contract)
+    # missing required column fails loudly at call time, for EVERY decode
+    # op — the per-clip passes and the rewrite / fan-out ones alike
+    # (shared audio.require_cols contract), never as a worker KeyError
     import pytest
+
+    from baskerville_spark.functions import audio_quality as AQ
 
     pcm = audio.encode(np.full(64, 1000, dtype=np.int16), "pcm_s16le")
     no_codec = spark.createDataFrame(
-        [("c1", bytearray(pcm))], "clip_id string, bytes binary")
-    with pytest.raises(ValueError, match="missing required column"):
-        audio_dc_offset(no_codec)
+        [("c1", bytearray(pcm), 16000)], "clip_id string, bytes binary, sr_hz int")
+    ops = (
+        audio_dc_offset, AQ.audio_loudness_stats, AQ.audio_spectral_features,
+        AQ.audio_pitch_period, AQ.audio_bandwidth, AQ.audio_vad_stats,
+        AQ.audio_channel_balance, audio_content_fingerprints,
+        lambda d: AQ.audio_resample(d, 8000), AQ.audio_downmix,
+        AQ.audio_trim_silence, AQ.audio_normalize,
+        lambda d: AQ.audio_segment(d, 32), AQ.audio_split_on_silence,
+        lambda d: reencode(d, "flac"),
+    )
+    for op in ops:
+        with pytest.raises(ValueError, match="missing required column"):
+            op(no_codec)
 
 
 def test_audio_channel_balance(spark):

@@ -1279,3 +1279,24 @@ def test_wasserstein_binned_identical_sides_and_clamping(spark):
         df, "v", F.col("sa"), ["grp"], lo=0.0, hi=4.0, n_bins=4
     ).collect()[0]
     assert (r["n_a"], r["n_b"], r["w1"], r["drift"]) == (3, 3, 0.0, False)
+
+
+def test_decode_state_agrees_with_invariant_on_empty_payload(spark):
+    """An empty payload decodes to zero samples: the standalone decode
+    state and the invariant's decode pass must both count it as failed,
+    so the audio-state rows do not depend on which pass produced them."""
+    from baskerville_spark import audio as A
+    from baskerville_spark.checks import audio_state as AS
+    from baskerville_spark.checks.invariants import audio_invariant
+
+    ok = A.encode(A.synth_pcm_n("c0", 16000, 320), "pcm_s16le")
+    clips = spark.createDataFrame(
+        [(0, "c0", bytearray(ok), 16000, 20, "pcm_s16le", "t"),
+         (0, "c1", bytearray(b""), 16000, 20, "pcm_s16le", "t")],
+        "part_id int, clip_id string, bytes binary, sr_hz int, dur_ms int, "
+        "codec string, transcript string")
+    direct = [r.asDict() for r in AS.decode_state(clips).collect()]
+    via_inv = [r.asDict() for r in
+               AS.state_from_per_clip(audio_invariant(clips)).collect()]
+    assert direct == via_inv
+    assert direct[0]["n_decoded"] == 1 and direct[0]["n_failed"] == 1
