@@ -6,6 +6,10 @@ Spark-first (baskerville_spark package), with a DuckDB oracle in
 rounded identically on both sides). Every gate has an oracle: the ``_GATES``
 table at the end of this module holds one (callable, oracle) row per gate,
 in driver order.
+
+Synthetic gate fixtures are a per-index ``plant(i)`` run through
+``generator.rows_from_range``; gates measure decoded payloads only through
+``audio.decode_pass``.
 """
 
 from __future__ import annotations
@@ -13,8 +17,13 @@ from __future__ import annotations
 import uuid
 from collections.abc import Callable
 
+import numpy as np
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+
+from baskerville_spark import audio as au
+from baskerville_spark.generator import PLANT_SCHEMA, planted_clip, rows_from_range
 
 EVENT_TYPES = ["click", "error", "purchase", "signup", "view"]
 
@@ -4186,35 +4195,15 @@ def q83_loudness_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     and the gate emits exact integers plus |measured − analytic| < 1e-9
     booleans (the q46 bounded-verdict pattern); the oracle rebuilds the
     integer columns arithmetically and pins the booleans TRUE."""
-    import pandas as pd
-
     from baskerville_spark.functions.audio_quality import audio_loudness_stats
 
-    def synth(batches):
-        import numpy as np
+    def plant(i):
+        amp = 500 + (i * 613) % 40000
+        v = min(amp, 32767)
+        n = 100 + (i % 7) * 50
+        return [planted_clip("dc", i, np.full(n, v, dtype="<i2"), level=v)]
 
-        for pdf in batches:
-            out = []
-            for i in pdf["id"]:
-                i = int(i)
-                amp = 500 + (i * 613) % 40000
-                v = min(amp, 32767)
-                n = 100 + (i % 7) * 50
-                out.append(
-                    {
-                        "part_id": i % 4,
-                        "clip_id": f"dc_{i:06d}",
-                        "bytes": np.full(n, v, dtype="<i2").tobytes(),
-                        "codec": "pcm_s16le",
-                        "level": v,
-                    }
-                )
-            yield pd.DataFrame(out)
-
-    clips = spark.range(300).mapInPandas(
-        synth,
-        schema="part_id int, clip_id string, bytes binary, codec string, level int",
-    )
+    clips = rows_from_range(spark, 300, plant, PLANT_SCHEMA + ", level int")
     stats = audio_loudness_stats(clips).join(
         clips.select("clip_id", "level"), "clip_id"
     )
@@ -4253,38 +4242,18 @@ def q84_spectral_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     integer dominant_bin to its closed form and bounds the centroid
     (|centroid − k| < 1e-6 — leakage-free means numerically-zero mass
     elsewhere). Oracle rebuilds the integers arithmetically."""
-    import pandas as pd
-
     from baskerville_spark.functions.audio_quality import audio_spectral_features
 
-    sr, n_fft = 16000, 256
+    n_fft = 256
 
-    def synth(batches):
-        import numpy as np
+    def plant(i):
+        k = (i % 40) + 1                      # target bin 1..40
+        n = n_fft + (i % 3) * 100             # >= one full window
+        t = np.arange(n)
+        pcm = (10000 * np.sin(2 * np.pi * k * t / n_fft)).astype("<i2")
+        return [planted_clip("sine", i, pcm, bin_k=k)]
 
-        for pdf in batches:
-            out = []
-            for i in pdf["id"]:
-                i = int(i)
-                k = (i % 40) + 1                      # target bin 1..40
-                n = n_fft + (i % 3) * 100             # >= one full window
-                t = np.arange(n)
-                pcm = (10000 * np.sin(2 * np.pi * k * t / n_fft)).astype("<i2")
-                out.append(
-                    {
-                        "part_id": i % 4,
-                        "clip_id": f"sine_{i:06d}",
-                        "bytes": pcm.tobytes(),
-                        "codec": "pcm_s16le",
-                        "bin_k": k,
-                    }
-                )
-            yield pd.DataFrame(out)
-
-    clips = spark.range(200).mapInPandas(
-        synth,
-        schema="part_id int, clip_id string, bytes binary, codec string, bin_k int",
-    )
+    clips = rows_from_range(spark, 200, plant, PLANT_SCHEMA + ", bin_k int")
     feats = audio_spectral_features(clips, n_fft=n_fft).join(
         clips.select("clip_id", "bin_k"), "clip_id"
     )
@@ -4321,8 +4290,6 @@ def q85_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
     now 2k cycles per 256-sample window — dominant_bin doubles, an integer
     the oracle rebuilds arithmetically. Pipeline under test: decode →
     interp → re-encode → decode → rFFT, all Arrow passes."""
-    import pandas as pd
-
     from baskerville_spark.functions.audio_quality import (
         audio_resample,
         audio_spectral_features,
@@ -4330,33 +4297,15 @@ def q85_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     n_fft = 256
 
-    def synth(batches):
-        import numpy as np
+    def plant(i):
+        k = (i % 20) + 1                      # keep 2k well under Nyquist
+        n = n_fft * 2 + (i % 3) * 100
+        t = np.arange(n)
+        pcm = (10000 * np.sin(2 * np.pi * k * t / n_fft)).astype("<i2")
+        return [planted_clip("rs", i, pcm, sr_hz=16000, bin_k=k)]
 
-        for pdf in batches:
-            out = []
-            for i in pdf["id"]:
-                i = int(i)
-                k = (i % 20) + 1                      # keep 2k well under Nyquist
-                n = n_fft * 2 + (i % 3) * 100
-                t = np.arange(n)
-                pcm = (10000 * np.sin(2 * np.pi * k * t / n_fft)).astype("<i2")
-                out.append(
-                    {
-                        "part_id": i % 4,
-                        "clip_id": f"rs_{i:06d}",
-                        "bytes": pcm.tobytes(),
-                        "sr_hz": 16000,
-                        "codec": "pcm_s16le",
-                        "bin_k": k,
-                    }
-                )
-            yield pd.DataFrame(out)
-
-    clips = spark.range(150).mapInPandas(
-        synth,
-        schema="part_id int, clip_id string, bytes binary, sr_hz int, "
-               "codec string, bin_k int",
+    clips = rows_from_range(
+        spark, 150, plant, PLANT_SCHEMA + ", sr_hz int, bin_k int"
     )
     down = audio_resample(clips, target_sr=8000)
     feats = audio_spectral_features(down, n_fft=n_fft).join(
@@ -4439,8 +4388,6 @@ def q87_downmix(spark: SparkSession, sf_dir: str) -> DataFrame:
     frame counts (total//2, minus an odd-tail truncation case) and the
     dominant bin through the REAL decode → deinterleave → mean → encode →
     decode → rFFT pipeline."""
-    import pandas as pd
-
     from baskerville_spark.functions.audio_quality import (
         audio_downmix,
         audio_spectral_features,
@@ -4448,39 +4395,20 @@ def q87_downmix(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     n_fft = 256
 
-    def synth(batches):
-        import numpy as np
+    def plant(i):
+        k = (i % 30) + 1
+        frames = n_fft + (i % 3) * 100
+        t = np.arange(frames)
+        left = (10000 * np.sin(2 * np.pi * k * t / n_fft)).astype("<i2")
+        right = left if i % 2 == 0 else np.zeros(frames, dtype="<i2")
+        stereo = np.empty(frames * 2, dtype="<i2")
+        stereo[0::2] = left
+        stereo[1::2] = right
+        if i % 11 == 3:
+            stereo = np.append(stereo, np.int16(7))  # odd tail: one orphan sample
+        return [planted_clip("st", i, stereo, bin_k=k)]
 
-        for pdf in batches:
-            out = []
-            for i in pdf["id"]:
-                i = int(i)
-                k = (i % 30) + 1
-                frames = n_fft + (i % 3) * 100
-                t = np.arange(frames)
-                left = (10000 * np.sin(2 * np.pi * k * t / n_fft)).astype("<i2")
-                right = left if i % 2 == 0 else np.zeros(frames, dtype="<i2")
-                stereo = np.empty(frames * 2, dtype="<i2")
-                stereo[0::2] = left
-                stereo[1::2] = right
-                raw = stereo.tobytes()
-                if i % 11 == 3:
-                    raw = raw + b"\x07\x00"  # odd tail: one orphan sample
-                out.append(
-                    {
-                        "part_id": i % 4,
-                        "clip_id": f"st_{i:06d}",
-                        "bytes": raw,
-                        "codec": "pcm_s16le",
-                        "bin_k": k,
-                    }
-                )
-            yield pd.DataFrame(out)
-
-    clips = spark.range(150).mapInPandas(
-        synth,
-        schema="part_id int, clip_id string, bytes binary, codec string, bin_k int",
-    )
+    clips = rows_from_range(spark, 150, plant, PLANT_SCHEMA + ", bin_k int")
     mono = audio_downmix(clips, n_channels=2)
     feats = audio_spectral_features(mono, n_fft=n_fft).join(
         clips.select("clip_id", "bin_k"), "clip_id"
@@ -4511,36 +4439,19 @@ FROM idx
 def _q88_q89_clips(spark: SparkSession):
     """150 pcm clips with EXACT closed-form structure: lead = i%40 zero
     samples, body = (i%50)+1 samples of constant 5000, tail = i%25 zeros."""
-    import pandas as pd
 
-    def synth(batches):
-        import numpy as np
+    def plant(i):
+        lead, body, tail = i % 40, (i % 50) + 1, i % 25
+        pcm = np.concatenate(
+            [
+                np.zeros(lead, dtype="<i2"),
+                np.full(body, 5000, dtype="<i2"),
+                np.zeros(tail, dtype="<i2"),
+            ]
+        )
+        return [planted_clip("tr", i, pcm)]
 
-        for pdf in batches:
-            out = []
-            for i in pdf["id"]:
-                i = int(i)
-                lead, body, tail = i % 40, (i % 50) + 1, i % 25
-                pcm = np.concatenate(
-                    [
-                        np.zeros(lead, dtype="<i2"),
-                        np.full(body, 5000, dtype="<i2"),
-                        np.zeros(tail, dtype="<i2"),
-                    ]
-                )
-                out.append(
-                    {
-                        "part_id": i % 4,
-                        "clip_id": f"tr_{i:06d}",
-                        "bytes": pcm.tobytes(),
-                        "codec": "pcm_s16le",
-                    }
-                )
-            yield pd.DataFrame(out)
-
-    return spark.range(150).mapInPandas(
-        synth, schema="part_id int, clip_id string, bytes binary, codec string"
-    )
+    return rows_from_range(spark, 150, plant, PLANT_SCHEMA)
 
 
 def q88_trim_silence(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4551,21 +4462,10 @@ def q88_trim_silence(spark: SparkSession, sf_dir: str) -> DataFrame:
     from baskerville_spark.functions.audio_quality import audio_trim_silence
 
     trimmed = audio_trim_silence(_q88_q89_clips(spark), threshold=100)
-
-    def measure(batches):
-        import pandas as pd
-
-        from baskerville_spark import audio as au
-
-        for pdf in batches:
-            ns = [
-                len(au.decode(bz, c))
-                for bz, c in zip(pdf["bytes"], pdf["codec"])
-            ]
-            yield pd.DataFrame({"clip_id": pdf["clip_id"], "trimmed_samples": ns})
-
-    return trimmed.mapInPandas(
-        measure, schema="clip_id string, trimmed_samples long"
+    return au.decode_pass(
+        trimmed.select("clip_id", "bytes", "codec"),
+        T.StructType.fromDDL("clip_id string, trimmed_samples long"),
+        lambda pcm: (len(pcm),),
     )
 
 
@@ -4612,62 +4512,31 @@ FROM m
 # --------------------------------------------------------------------------
 
 
+def _len_peak(df: DataFrame) -> DataFrame:
+    """(clip_id, n_samples, peak |sample|) of every clip in ``df``."""
+    return au.decode_pass(
+        df.select("clip_id", "bytes", "codec"),
+        T.StructType.fromDDL("clip_id string, n_samples long, peak long"),
+        lambda pcm: (len(pcm), int(abs(pcm.astype("int32")).max())),
+    )
+
+
 def q90_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Peak-normalization gate: constant-amplitude plants (A_i closed-form,
     one-in-13 silent and therefore dropped) through the real decode ->
     gain -> round -> encode pass, alternating lossless codecs. The
     normalized peak must equal the target EXACTLY (integer), and lengths
     must survive unchanged — both rebuilt arithmetically by the oracle."""
-    import pandas as pd
-
     from baskerville_spark.functions.audio_quality import audio_normalize
 
-    def synth(batches):
-        import numpy as np
+    def plant(i):
+        amp = 0 if i % 13 == 5 else (i % 317) * 197 + 123
+        n = (i % 50) + 5
+        codec = "pcm_s16le" if i % 2 == 0 else "flac"
+        return [planted_clip("nm", i, np.full(n, amp, dtype="<i2"), codec)]
 
-        from baskerville_spark import audio as au
-
-        for pdf in batches:
-            out = []
-            for i in pdf["id"]:
-                i = int(i)
-                amp = 0 if i % 13 == 5 else (i % 317) * 197 + 123
-                n = (i % 50) + 5
-                pcm = np.full(n, amp, dtype="<i2")
-                codec = "pcm_s16le" if i % 2 == 0 else "flac"
-                out.append(
-                    {
-                        "part_id": i % 4,
-                        "clip_id": f"nm_{i:06d}",
-                        "bytes": au.encode(pcm, codec),
-                        "codec": codec,
-                    }
-                )
-            yield pd.DataFrame(out)
-
-    clips = spark.range(150).mapInPandas(
-        synth, schema="part_id int, clip_id string, bytes binary, codec string"
-    )
-    normed = audio_normalize(clips, target_peak=20000)
-
-    def measure(batches):
-        import pandas as pd
-
-        from baskerville_spark import audio as au
-
-        for pdf in batches:
-            peaks, ns = [], []
-            for bz, c in zip(pdf["bytes"], pdf["codec"]):
-                x = au.decode(bz, c)
-                peaks.append(int(abs(x.astype("int32")).max()))
-                ns.append(len(x))
-            yield pd.DataFrame(
-                {"clip_id": pdf["clip_id"], "n_samples": ns, "peak": peaks}
-            )
-
-    return normed.mapInPandas(
-        measure, schema="clip_id string, n_samples long, peak long"
-    )
+    clips = rows_from_range(spark, 150, plant, PLANT_SCHEMA)
+    return _len_peak(audio_normalize(clips, target_peak=20000))
 
 
 _Q90_SQL = """
@@ -4686,70 +4555,23 @@ def q91_overlay(spark: SparkSession, sf_dir: str) -> DataFrame:
     drop). Saturating int16 addition gives peak = LEAST(A+B, 32767) and
     length = LEAST(n_a, n_b) — pure integers the oracle rebuilds. Runs the
     real join -> decode both -> mix -> encode pipeline."""
-    import pandas as pd
-
     from baskerville_spark.functions.audio_quality import audio_overlay
 
-    def synth_side(amp_fn, n_fn, keep_fn, prefix):
-        def synth(batches):
-            import numpy as np
+    def base(i):
+        pcm = np.full((i % 40) + 10, 25000 + (i % 8) * 1000, dtype="<i2")
+        return [planted_clip("ov", i, pcm)]
 
-            from baskerville_spark import audio as au
+    def over(i):
+        if i % 5 == 2:
+            return []  # missing overlay: the inner join drops the clip
+        pcm = np.full((i % 33) + 5, (i % 10) * 1000 + 500, dtype="<i2")
+        return [planted_clip("ov", i, pcm)]
 
-            for pdf in batches:
-                out = []
-                for i in pdf["id"]:
-                    i = int(i)
-                    if not keep_fn(i):
-                        continue
-                    pcm = np.full(n_fn(i), amp_fn(i), dtype="<i2")
-                    out.append(
-                        {
-                            "part_id": i % 4,
-                            "clip_id": f"{prefix}_{i:06d}",
-                            "bytes": au.encode(pcm, "pcm_s16le"),
-                            "codec": "pcm_s16le",
-                        }
-                    )
-                yield pd.DataFrame(out)
-
-        return synth
-
-    schema = "part_id int, clip_id string, bytes binary, codec string"
-    base = spark.range(150).mapInPandas(
-        synth_side(
-            lambda i: 25000 + (i % 8) * 1000, lambda i: (i % 40) + 10,
-            lambda i: True, "ov",
-        ),
-        schema=schema,
+    mixed = audio_overlay(
+        rows_from_range(spark, 150, base, PLANT_SCHEMA),
+        rows_from_range(spark, 150, over, PLANT_SCHEMA),
     )
-    over = spark.range(150).mapInPandas(
-        synth_side(
-            lambda i: (i % 10) * 1000 + 500, lambda i: (i % 33) + 5,
-            lambda i: i % 5 != 2, "ov",
-        ),
-        schema=schema,
-    )
-    mixed = audio_overlay(base, over)
-
-    def measure(batches):
-        import pandas as pd
-
-        from baskerville_spark import audio as au
-
-        for pdf in batches:
-            peaks, ns = [], []
-            for bz, c in zip(pdf["bytes"], pdf["codec"]):
-                x = au.decode(bz, c)
-                peaks.append(int(abs(x.astype("int32")).max()))
-                ns.append(len(x))
-            yield pd.DataFrame(
-                {"clip_id": pdf["clip_id"], "n_samples": ns, "peak": peaks}
-            )
-
-    return mixed.mapInPandas(
-        measure, schema="clip_id string, n_samples long, peak long"
-    )
+    return _len_peak(mixed)
 
 
 _Q91_SQL = """
@@ -4768,38 +4590,15 @@ def q92_pitch(spark: SparkSession, sf_dir: str) -> DataFrame:
     periods p in [4, 42] — the exact-int64 autocorrelation argmax must
     recover p itself (not a harmonic: ties break to the smallest lag, and
     (W-p) > (W-2p) separates the fundamental from its multiples)."""
-    import pandas as pd
-
     from baskerville_spark.functions.audio_quality import audio_pitch_period
 
-    def synth(batches):
-        import numpy as np
+    def plant(i):
+        p = 2 * ((i % 20) + 2)
+        t = np.arange(512)
+        pcm = np.where((t % p) < p // 2, 8000, -8000).astype("<i2")
+        return [planted_clip("pt", i, pcm, planted_p=p)]
 
-        from baskerville_spark import audio as au
-
-        for pdf in batches:
-            out = []
-            for i in pdf["id"]:
-                i = int(i)
-                p = 2 * ((i % 20) + 2)
-                t = np.arange(512)
-                pcm = np.where((t % p) < p // 2, 8000, -8000).astype("<i2")
-                out.append(
-                    {
-                        "part_id": i % 4,
-                        "clip_id": f"pt_{i:06d}",
-                        "bytes": au.encode(pcm, "pcm_s16le"),
-                        "codec": "pcm_s16le",
-                        "planted_p": p,
-                    }
-                )
-            yield pd.DataFrame(out)
-
-    clips = spark.range(150).mapInPandas(
-        synth,
-        schema="part_id int, clip_id string, bytes binary, codec string,"
-        " planted_p int",
-    )
+    clips = rows_from_range(spark, 150, plant, PLANT_SCHEMA + ", planted_p int")
     periods = audio_pitch_period(clips, min_lag=2, max_lag=64, window=512)
     return periods.join(clips.select("clip_id", "planted_p"), "clip_id").select(
         "clip_id",
@@ -5537,40 +5336,22 @@ def q105_split_on_silence(spark: SparkSession, sf_dir: str) -> DataFrame:
     two tones with exact lengths; when g < 64 the interior pause stays
     inside one segment of length a+g+b. Pure integers from the plant mods,
     through the real decode → split → encode pipeline."""
-    import pandas as pd
-
     from baskerville_spark.functions.audio_quality import audio_split_on_silence
 
-    def synth(batches):
-        import numpy as np
+    def plant(i):
+        lead, a, g, b, tail = (
+            i % 30, (i % 40) + 5, (i % 90) + 20, (i % 25) + 3, i % 50,
+        )
+        pcm = np.concatenate([
+            np.zeros(lead, dtype="<i2"),
+            np.full(a, 5000, dtype="<i2"),
+            np.zeros(g, dtype="<i2"),
+            np.full(b, 5000, dtype="<i2"),
+            np.zeros(tail, dtype="<i2"),
+        ])
+        return [planted_clip("vd", i, pcm)]
 
-        from baskerville_spark import audio as au
-
-        for pdf in batches:
-            out = []
-            for i in pdf["id"]:
-                i = int(i)
-                lead, a, g, b, tail = (
-                    i % 30, (i % 40) + 5, (i % 90) + 20, (i % 25) + 3, i % 50,
-                )
-                pcm = np.concatenate([
-                    np.zeros(lead, dtype="<i2"),
-                    np.full(a, 5000, dtype="<i2"),
-                    np.zeros(g, dtype="<i2"),
-                    np.full(b, 5000, dtype="<i2"),
-                    np.zeros(tail, dtype="<i2"),
-                ])
-                out.append({
-                    "part_id": i % 4,
-                    "clip_id": f"vd_{i:06d}",
-                    "bytes": au.encode(pcm, "pcm_s16le"),
-                    "codec": "pcm_s16le",
-                })
-            yield pd.DataFrame(out)
-
-    clips = spark.range(150).mapInPandas(
-        synth, schema="part_id int, clip_id string, bytes binary, codec string"
-    )
+    clips = rows_from_range(spark, 150, plant, PLANT_SCHEMA)
     segs = audio_split_on_silence(clips, threshold=100, min_gap=64)
     return segs.groupBy("clip_id").agg(
         F.count(F.lit(1)).cast("long").alias("n_segments"),
@@ -5768,53 +5549,27 @@ def q109_audio_align(spark: SparkSession, sf_dir: str) -> DataFrame:
     (c) truncated twins (shorter than base: no valid placement) → dropped.
     k_i is a frame multiple except the i%5==2 stratum (k=100+i%3), which
     forces the ±1-frame exact-dot refinement off the coarse grid."""
-    import pandas as pd
-
     from baskerville_spark.functions.audio_dedup import audio_align_offsets
 
-    def synth(batches):
-        import numpy as np
+    def plant(i):
+        amp = 4000 + (i % 8) * 500
+        m = 240 + (i % 5) * 48
+        k = 100 + (i % 3) if i % 5 == 2 else 64 * ((i % 7) + 1)
+        base = np.full(m, amp, dtype="<i2")
+        r = i % 5
+        if r == 1:  # truncated: shorter than base → dropped
+            twin = np.full(m - 50, amp, dtype="<i2")
+        elif r == 3:  # rescaled delay copy
+            twin = np.concatenate(
+                [np.zeros(k, dtype="<i2"),
+                 np.full(m, amp + 1000, dtype="<i2")]
+            )
+        else:  # exact delay copy
+            twin = np.concatenate([np.zeros(k, dtype="<i2"), base])
+        codec = "flac" if (r in (0, 4) and i % 3 == 0) else "pcm_s16le"
+        return [planted_clip("al", i, base), planted_clip("tw", i, twin, codec)]
 
-        from baskerville_spark import audio as au
-
-        for pdf in batches:
-            out = []
-            for i in pdf["id"]:
-                i = int(i)
-                amp = 4000 + (i % 8) * 500
-                m = 240 + (i % 5) * 48
-                k = 100 + (i % 3) if i % 5 == 2 else 64 * ((i % 7) + 1)
-                base = np.full(m, amp, dtype="<i2")
-                out.append(
-                    {
-                        "clip_id": f"al_{i:06d}",
-                        "bytes": au.encode(base, "pcm_s16le"),
-                        "codec": "pcm_s16le",
-                    }
-                )
-                r = i % 5
-                if r == 1:  # truncated: shorter than base → dropped
-                    twin = np.full(m - 50, amp, dtype="<i2")
-                elif r == 3:  # rescaled delay copy
-                    twin = np.concatenate(
-                        [np.zeros(k, dtype="<i2"),
-                         np.full(m, amp + 1000, dtype="<i2")]
-                    )
-                else:  # exact delay copy
-                    twin = np.concatenate([np.zeros(k, dtype="<i2"), base])
-                codec = "flac" if (r in (0, 4) and i % 3 == 0) else "pcm_s16le"
-                out.append(
-                    {
-                        "clip_id": f"tw_{i:06d}",
-                        "bytes": au.encode(twin, codec),
-                        "codec": codec,
-                    }
-                )
-            yield pd.DataFrame(out)
-
-    clips = spark.range(150).mapInPandas(
-        synth, schema="clip_id string, bytes binary, codec string"
-    )
+    clips = rows_from_range(spark, 150, plant, PLANT_SCHEMA)
     cands = spark.range(150).select(
         F.format_string("al_%06d", "id").alias("base_id"),
         F.format_string("tw_%06d", "id").alias("twin_id"),
@@ -5916,44 +5671,24 @@ def q111_bandwidth(spark: SparkSession, sf_dir: str) -> DataFrame:
     5+i%4 and 90+i%5) → 50% each, so the 0.99 threshold lands on the HIGH
     bin; (c) high-band only (bin 80+i%8) → that bin. band_frac =
     rolloff/128 exactly."""
-    import pandas as pd
-
     from baskerville_spark.functions.audio_quality import audio_bandwidth
 
-    def synth(batches):
-        import numpy as np
+    t = np.arange(256)
 
-        from baskerville_spark import audio as au
+    def sine(k, amp):
+        return amp * np.sin(2 * np.pi * k * t / 256.0)
 
-        t = np.arange(256)
+    def plant(i):
+        r = i % 3
+        if r == 0:
+            x = sine(5 + i % 4, 8000) + sine(100, 80)
+        elif r == 1:
+            x = sine(5 + i % 4, 6000) + sine(90 + i % 5, 6000)
+        else:
+            x = sine(80 + i % 8, 7000)
+        return [planted_clip("bw", i, np.rint(x).astype("<i2"))]
 
-        def sine(k, amp):
-            return amp * np.sin(2 * np.pi * k * t / 256.0)
-
-        for pdf in batches:
-            out = []
-            for i in pdf["id"]:
-                i = int(i)
-                r = i % 3
-                if r == 0:
-                    x = sine(5 + i % 4, 8000) + sine(100, 80)
-                elif r == 1:
-                    x = sine(5 + i % 4, 6000) + sine(90 + i % 5, 6000)
-                else:
-                    x = sine(80 + i % 8, 7000)
-                pcm = np.rint(x).astype("<i2")
-                out.append(
-                    {
-                        "clip_id": f"bw_{i:06d}",
-                        "bytes": au.encode(pcm, "pcm_s16le"),
-                        "codec": "pcm_s16le",
-                    }
-                )
-            yield pd.DataFrame(out)
-
-    clips = spark.range(150).mapInPandas(
-        synth, schema="clip_id string, bytes binary, codec string"
-    )
+    clips = rows_from_range(spark, 150, plant, PLANT_SCHEMA)
     return audio_bandwidth(clips, n_fft=256, energy_frac=0.99).select(
         "clip_id", "rolloff_bin", "band_frac"
     )
@@ -6052,59 +5787,19 @@ def q113_mulaw_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     pcm→mulaw transcoded through the real reencode pipeline and decoded
     back; the quantized value must equal the G.711 segment arithmetic
     (sign·(((v>>(e+3) & 15)·8 + 132)<<e) − 132) restated in SQL."""
-    import pandas as pd
-
     from baskerville_spark.functions.audio_dedup import reencode
 
-    def synth(batches):
-        import numpy as np
+    def plant(i):
+        xv = (i * 437) % 65536 - 32768
+        return [planted_clip("mu", i, np.full(40, xv, dtype="<i2"))]
 
-        from baskerville_spark import audio as au
-
-        for pdf in batches:
-            out = []
-            for i in pdf["id"]:
-                i = int(i)
-                xv = (i * 437) % 65536 - 32768
-                pcm = np.full(40, xv, dtype="<i2")
-                out.append(
-                    {
-                        "clip_id": f"mu_{i:06d}",
-                        "bytes": au.encode(pcm, "pcm_s16le"),
-                        "codec": "pcm_s16le",
-                    }
-                )
-            yield pd.DataFrame(out)
-
-    clips = spark.range(150).mapInPandas(
-        synth, schema="clip_id string, bytes binary, codec string"
-    )
-    mu = reencode(clips, "mulaw")
-
-    def measure(batches):
-        import pandas as pd
-
-        from baskerville_spark import audio as au
-
-        for pdf in batches:
-            vals, ns, uni = [], [], []
-            for bz, c in zip(pdf["bytes"], pdf["codec"]):
-                x = au.decode(bz, c)
-                vals.append(int(x[0]))
-                ns.append(len(x))
-                uni.append(bool((x == x[0]).all()))
-            yield pd.DataFrame(
-                {
-                    "clip_id": pdf["clip_id"],
-                    "mu_val": vals,
-                    "n_samples": ns,
-                    "uniform": uni,
-                }
-            )
-
-    return mu.mapInPandas(
-        measure,
-        schema="clip_id string, mu_val long, n_samples long, uniform boolean",
+    mu = reencode(rows_from_range(spark, 150, plant, PLANT_SCHEMA), "mulaw")
+    return au.decode_pass(
+        mu.select("clip_id", "bytes", "codec"),
+        T.StructType.fromDDL(
+            "clip_id string, mu_val long, n_samples long, uniform boolean"
+        ),
+        lambda x: (int(x[0]), len(x), bool((x == x[0]).all())),
     )
 
 
@@ -6278,43 +5973,24 @@ def q117_vad_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     utterances, gap excluded from speech), 0 < g < 64 stays one utterance
     WITH the pause counted as speech, g = 0 is one contiguous tone; all
     integers closed-form, speech_frac = exact int/int IEEE division."""
-    import pandas as pd
-
     from baskerville_spark.functions.audio_quality import audio_vad_stats
 
-    def synth(batches):
-        import numpy as np
+    def plant(i):
+        lead, tail = 30 + i % 10, 20 + i % 7
+        m1, m2 = 150 + (i % 4) * 25, 100 + (i % 6) * 15
+        g = (i % 5) * 32
+        pcm = np.concatenate(
+            [
+                np.zeros(lead, dtype="<i2"),
+                np.full(m1, 5000, dtype="<i2"),
+                np.zeros(g, dtype="<i2"),
+                np.full(m2, -4000, dtype="<i2"),
+                np.zeros(tail, dtype="<i2"),
+            ]
+        )
+        return [planted_clip("vd", i, pcm)]
 
-        from baskerville_spark import audio as au
-
-        for pdf in batches:
-            out = []
-            for i in pdf["id"]:
-                i = int(i)
-                lead, tail = 30 + i % 10, 20 + i % 7
-                m1, m2 = 150 + (i % 4) * 25, 100 + (i % 6) * 15
-                g = (i % 5) * 32
-                pcm = np.concatenate(
-                    [
-                        np.zeros(lead, dtype="<i2"),
-                        np.full(m1, 5000, dtype="<i2"),
-                        np.zeros(g, dtype="<i2"),
-                        np.full(m2, -4000, dtype="<i2"),
-                        np.zeros(tail, dtype="<i2"),
-                    ]
-                )
-                out.append(
-                    {
-                        "clip_id": f"vd_{i:06d}",
-                        "bytes": au.encode(pcm, "pcm_s16le"),
-                        "codec": "pcm_s16le",
-                    }
-                )
-            yield pd.DataFrame(out)
-
-    clips = spark.range(150).mapInPandas(
-        synth, schema="clip_id string, bytes binary, codec string"
-    )
+    clips = rows_from_range(spark, 150, plant, PLANT_SCHEMA)
     return audio_vad_stats(clips, threshold=100, min_gap=64).select(
         "clip_id", "n_samples", "n_utterances", "speech_samples",
         "speech_frac", "longest_gap",
@@ -7497,36 +7173,18 @@ FROM fd3
 
 
 def q131_dc_offset(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import pandas as pd
-
     from baskerville_spark.functions.audio_quality import audio_dc_offset
 
-    def synth(batches):
-        import numpy as np
+    def plant(i):
+        v = -2000 + (i * 37) % 4001
+        a = 100 + (i % 5) * 200
+        n = 120 + (i % 6) * 40  # even: the ±a legs cancel exactly
+        x = np.empty(n, dtype="<i2")
+        x[0::2] = v + a
+        x[1::2] = v - a
+        return [planted_clip("bias", i, x)]
 
-        for pdf in batches:
-            out = []
-            for i in pdf["id"]:
-                i = int(i)
-                v = -2000 + (i * 37) % 4001
-                a = 100 + (i % 5) * 200
-                n = 120 + (i % 6) * 40  # even: the ±a legs cancel exactly
-                x = np.empty(n, dtype="<i2")
-                x[0::2] = v + a
-                x[1::2] = v - a
-                out.append(
-                    {
-                        "part_id": i % 4,
-                        "clip_id": f"bias_{i:06d}",
-                        "bytes": x.tobytes(),
-                        "codec": "pcm_s16le",
-                    }
-                )
-            yield pd.DataFrame(out)
-
-    clips = spark.range(300).mapInPandas(
-        synth, schema="part_id int, clip_id string, bytes binary, codec string"
-    )
+    clips = rows_from_range(spark, 300, plant, PLANT_SCHEMA)
     return audio_dc_offset(clips, suspect_frac=0.02).select(
         "clip_id", "n_samples", "dc_mean", "dc_frac", "dc_suspect"
     )
@@ -7671,53 +7329,30 @@ FROM pg CROSS JOIN tot
 
 
 def q134_channel_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import pandas as pd
-
     from baskerville_spark.functions.audio_quality import audio_channel_balance
 
-    def synth(batches):
-        import numpy as np
+    def plant(i):
+        a = 400 + (i * 31) % 2000
+        b = 300 + (i * 17) % 1500
+        nf = 160 + (i % 5) * 32  # divisible by 4: full ± periods
+        s2 = np.tile(np.array([1, -1], np.int64), nf // 2)
+        cs = i % 4
+        left = a * s2
+        if cs == 0:
+            right = b * s2
+        elif cs == 1:
+            right = -b * s2
+        elif cs == 2:
+            right = b * np.tile(np.array([1, 1, -1, -1], np.int64), nf // 4)
+        else:
+            right = np.zeros(nf, np.int64)
+        x = np.empty(nf * 2, dtype="<i2")
+        x[0::2] = left
+        x[1::2] = right
+        return [planted_clip("st", i, x, a=a, b=b, cs=cs)]
 
-        for pdf in batches:
-            out = []
-            for i in pdf["id"]:
-                i = int(i)
-                a = 400 + (i * 31) % 2000
-                b = 300 + (i * 17) % 1500
-                nf = 160 + (i % 5) * 32  # divisible by 4: full ± periods
-                s2 = np.tile(np.array([1, -1], np.int64), nf // 2)
-                cs = i % 4
-                left = a * s2
-                if cs == 0:
-                    right = b * s2
-                elif cs == 1:
-                    right = -b * s2
-                elif cs == 2:
-                    right = b * np.tile(
-                        np.array([1, 1, -1, -1], np.int64), nf // 4
-                    )
-                else:
-                    right = np.zeros(nf, np.int64)
-                x = np.empty(nf * 2, dtype="<i2")
-                x[0::2] = left
-                x[1::2] = right
-                out.append(
-                    {
-                        "part_id": i % 4,
-                        "clip_id": f"st_{i:06d}",
-                        "bytes": x.tobytes(),
-                        "codec": "pcm_s16le",
-                        "a": a,
-                        "b": b,
-                        "cs": cs,
-                    }
-                )
-            yield pd.DataFrame(out)
-
-    clips = spark.range(300).mapInPandas(
-        synth,
-        schema="part_id int, clip_id string, bytes binary, codec string,"
-        " a int, b int, cs int",
+    clips = rows_from_range(
+        spark, 300, plant, PLANT_SCHEMA + ", a int, b int, cs int"
     )
     bal = audio_channel_balance(clips).join(
         clips.select("clip_id", "a", "b", "cs"), "clip_id"

@@ -64,6 +64,17 @@ _SUGGEST_SCHEMA = T.StructType([
 ])
 
 
+def _round6(v: float, edge: float, up: bool) -> float:
+    """``round(v, 6)``, or one step further up (``up``) or down when that
+    would cut ``edge``, the observed value the suggestion must admit.
+    ``v`` lies on the admitting side of ``edge``, so one step suffices; a
+    value with at most 6 decimals comes back unchanged."""
+    r = round(v, 6)
+    if (r < edge) if up else (r > edge):
+        r = round(r + (1e-6 if up else -1e-6), 6)
+    return r
+
+
 def suggest_constraints(
     df: DataFrame,
     columns: Optional[Sequence[str]] = None,
@@ -77,10 +88,12 @@ def suggest_constraints(
 
     - ``completeness``: null_rate == 0 -> threshold 0.0; 0 < rate <=
       ``low_null_max`` -> threshold round(rate * pad, 6) (headroom so the
-      suite doesn't flap on the next batch); rate above that -> no
-      completeness suggestion (the column is structurally sparse).
+      suite doesn't flap on the next batch), rounded up instead when
+      nearest rounding falls below the observed rate; rate above that ->
+      no completeness suggestion (the column is structurally sparse).
     - ``unique``: non-null count == row count == distinct count.
-    - ``bounds`` (numeric columns): observed [min, max], rounded to 6.
+    - ``bounds`` (numeric columns): observed [min, max], rounded to 6
+      decimals outward where nearest rounding would exclude min or max.
     - ``membership`` (string columns, 1 <= distinct <= ``max_members``):
       the sorted observed value set, comma-joined.
 
@@ -125,14 +138,16 @@ def suggest_constraints(
         if null_rate == 0.0:
             out.append((c, "completeness", 0.0, None, None, None, n))
         elif null_rate <= low_null_max:
-            out.append((c, "completeness", round(null_rate * pad, 6),
+            out.append((c, "completeness",
+                        _round6(max(null_rate * pad, null_rate), null_rate,
+                                True),
                         None, None, None, n))
         if n > 0 and nn == n and nd == n:
             out.append((c, "unique", 0.0, None, None, None, n))
         if isinstance(dtypes[c], _NUMERIC) and nn > 0:
-            lo, hi = prof[f"__lo_{c}"], prof[f"__hi_{c}"]
-            out.append((c, "bounds", 0.0, round(float(lo), 6),
-                        round(float(hi), 6), None, n))
+            lo, hi = float(prof[f"__lo_{c}"]), float(prof[f"__hi_{c}"])
+            out.append((c, "bounds", 0.0, _round6(lo, lo, False),
+                        _round6(hi, hi, True), None, n))
         if c in members:
             out.append((c, "membership", 0.0, None, None, members[c], n))
     out.sort(key=lambda r: (r[0], r[1]))

@@ -175,11 +175,15 @@ def select_within_token_budget(
         .collect(),
         key=lambda r: r["__block"],
     )
-    offsets: list[int] = []
-    acc = 0
+    # a block's offset is the SQL SUM of every earlier block: NULL while
+    # all earlier tokens are NULL (a block's own sum is NULL iff all its
+    # tokens are)
+    offsets: list[int | None] = []
+    acc = None
     for r in stats:
         offsets.append(acc)
-        acc += int(r["t"] or 0)
+        if r["t"] is not None:
+            acc = (acc or 0) + int(r["t"])
     bounds = [r["mx"] for r in stats[:-1]]
     if bounds:
         barr = F.array(
@@ -206,9 +210,9 @@ def select_within_token_budget(
                 *[F.lit(x) for i, o in enumerate(offsets) for x in (i, o)]
             ),
             block,
-        )
+        ).cast("long")
         if offsets
-        else F.lit(0)
+        else F.lit(None).cast("long")
     )
     w = (
         Window.partitionBy("__block")
@@ -217,10 +221,13 @@ def select_within_token_budget(
     )
     out = (
         base.withColumn("__block", block)
+        # SUM OVER (ROWS UNBOUNDED PRECEDING) across blocks: NULL only when
+        # both the earlier blocks and this block's prefix are all NULL
+        .withColumn("__in", F.sum("__tok").over(w))
         .withColumn(
-            "cum_tokens", (off + F.sum("__tok").over(w)).cast("long")
+            "cum_tokens", F.coalesce(off + F.col("__in"), off, F.col("__in"))
         )
         .withColumn("selected", F.col("cum_tokens") <= F.lit(int(budget)))
-        .drop("__pri", "__tok", "__block")
+        .drop("__pri", "__tok", "__block", "__in")
     )
     return out

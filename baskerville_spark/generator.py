@@ -1,9 +1,10 @@
 """Deterministic distributed synthetic clip-table generator.
 
 Scale-first design: the table is generated *on the executors* with
-``mapInPandas`` over ``spark.range(n)`` — no driver-side row loop, so the
-same code generates 60k rows locally or 10^12 rows on a cluster (the range
-source splits into partitions; every row is a pure function of its index).
+``rows_from_range`` (``mapInPandas`` over ``spark.range(n)``) — no
+driver-side row loop, so the same code generates 60k rows locally or 10^12
+rows on a cluster (the range source splits into partitions; every row is a
+pure function of its index).
 
 Violation injection is deterministic by row index (FIXTURES.md §1):
 - ``i % DUP_MOD == DUP_OFF``        → duplicate clip_id (copies row i-1's id)
@@ -21,12 +22,12 @@ values (tests/unit/baskerville_tests/features_tests/test_feature_css_total.py:42
 from __future__ import annotations
 
 from dataclasses import dataclass
-from typing import Iterator
+from typing import Callable, Iterator
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from baskerville_spark import audio
 from baskerville_spark.schema import CLIP_SCHEMA, TRANSCRIPT_REF_SCHEMA
@@ -151,39 +152,70 @@ def _default_partitions(spark: SparkSession, cfg: GenConfig) -> int:
     return max(cfg.n_parts, min(wide, cfg.n_rows // 50 + 1))
 
 
-def generate_clips(spark: SparkSession, cfg: GenConfig, num_partitions: int | None = None) -> DataFrame:
-    """Distributed generation: range → mapInPandas; each row derived from its index."""
-    num_partitions = num_partitions or _default_partitions(spark, cfg)
+#: Columns every planted gate fixture carries; gates append their own.
+PLANT_SCHEMA = "part_id int, clip_id string, bytes binary, codec string"
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+
+def planted_clip(
+    prefix: str, i: int, pcm: np.ndarray, codec: str = "pcm_s16le", **extra
+) -> dict:
+    """One ``PLANT_SCHEMA`` row (plus ``extra`` columns) of a planted gate
+    fixture: clip ``{prefix}_{i:06d}`` on part ``i % 4``, ``pcm`` encoded
+    under ``codec``."""
+    return {"part_id": i % 4, "clip_id": f"{prefix}_{i:06d}",
+            "bytes": audio.encode(pcm, codec), "codec": codec, **extra}
+
+
+def rows_from_range(
+    spark: SparkSession,
+    n: int,
+    rows: Callable[[int], list[dict]],
+    schema: str | T.StructType,
+    num_partitions: int | None = None,
+) -> DataFrame:
+    """``spark.range(n)`` → one ``mapInPandas`` that calls ``rows(i)`` for
+    every index: the single "row index → rows" loop behind the generator
+    and the gate fixtures.
+
+    ``rows(i)`` returns a list of row dicts — ``[]`` drops the index, two
+    dicts emit two rows. Every batch is built with the schema's column
+    names, so a batch whose indices were all dropped is still well-typed.
+    With ``num_partitions`` None the range keeps its default split.
+    """
+    names = (T.StructType.fromDDL(schema) if isinstance(schema, str) else schema).names
+
+    def batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for b in batches:
-            rows = [_row(int(i), cfg) for i in b["id"]]
-            yield pd.DataFrame(rows)
+            yield pd.DataFrame(
+                [r for i in b["id"] for r in rows(int(i))], columns=names
+            )
 
-    rng_df = spark.range(0, cfg.n_rows, 1, num_partitions)
-    return rng_df.mapInPandas(gen, schema=CLIP_SCHEMA)
+    return spark.range(0, n, 1, num_partitions).mapInPandas(batch, schema=schema)
+
+
+def generate_clips(spark: SparkSession, cfg: GenConfig, num_partitions: int | None = None) -> DataFrame:
+    """Distributed generation; each row derived from its index."""
+    return rows_from_range(
+        spark, cfg.n_rows, lambda i: [_row(i, cfg)], CLIP_SCHEMA,
+        num_partitions or _default_partitions(spark, cfg),
+    )
 
 
 def generate_transcript_ref(spark: SparkSession, cfg: GenConfig, num_partitions: int | None = None) -> DataFrame:
     """Authoritative transcript dim; RI-violation clip_ids deterministically absent."""
-    num_partitions = num_partitions or _default_partitions(spark, cfg)
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            rows = []
-            for i in (int(x) for x in b["id"]):
-                cid = clip_id_of(i, cfg)
-                if cid != canonical_clip_id(i):
-                    continue  # duplicate rows share the original's ref entry
-                if not is_clean_part(i, cfg) and i % RI_MOD == RI_OFF:
-                    continue  # injected referential-integrity violation
-                rows.append(
-                    {"clip_id": cid, "transcript_ref": canonical_transcript(cid)}
-                )
-            yield pd.DataFrame(rows, columns=["clip_id", "transcript_ref"])
+    def ref_rows(i: int) -> list[dict]:
+        cid = clip_id_of(i, cfg)
+        if cid != canonical_clip_id(i):
+            return []  # duplicate rows share the original's ref entry
+        if not is_clean_part(i, cfg) and i % RI_MOD == RI_OFF:
+            return []  # injected referential-integrity violation
+        return [{"clip_id": cid, "transcript_ref": canonical_transcript(cid)}]
 
-    rng_df = spark.range(0, cfg.n_rows, 1, num_partitions)
-    return rng_df.mapInPandas(gen, schema=TRANSCRIPT_REF_SCHEMA)
+    return rows_from_range(
+        spark, cfg.n_rows, ref_rows, TRANSCRIPT_REF_SCHEMA,
+        num_partitions or _default_partitions(spark, cfg),
+    )
 
 
 def expected_violation_indices(cfg: GenConfig) -> dict[str, list[int]]:

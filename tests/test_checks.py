@@ -1188,16 +1188,26 @@ def test_suggest_structurally_sparse_column_gets_no_completeness(spark):
 
 def test_suggested_suite_roundtrip_all_pass(spark):
     """The Deequ property: every suggested constraint passes on the table
-    it was profiled from — suggestions are the observed envelope."""
+    it was profiled from — suggestions are the observed envelope, also
+    where 6-decimal rounding would cut it (a min and a max with 7
+    decimals; a null rate below 4e-7, which rounds to 0.0)."""
     from baskerville_spark.checks.suggest import suggested_suite
     from baskerville_spark.checks.suite import run_suite
 
-    df = _suggest_frame(spark)
-    cons = suggested_suite(df)
-    assert len(cons) >= 6
-    verdicts = run_suite(df, cons).collect()
-    assert len(verdicts) == len(cons)
-    assert all(r["passed"] for r in verdicts)
+    frames = [
+        _suggest_frame(spark),
+        spark.createDataFrame([(0.1234567,), (0.5,), (1.0000004,)], "x double"),
+        spark.range(3_000_000).select(
+            F.when(F.col("id") == 0, F.lit(None)).otherwise(F.col("id"))
+            .alias("rare_null")
+        ),
+    ]
+    for df in frames:
+        cons = suggested_suite(df)
+        assert len(cons) >= (6 if df is frames[0] else 2)
+        verdicts = run_suite(df, cons).collect()
+        assert len(verdicts) == len(cons)
+        assert all(r["passed"] for r in verdicts), verdicts
 
 
 def test_functional_dependency_holds_violates_and_nulls(spark):

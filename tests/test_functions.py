@@ -1056,3 +1056,41 @@ def test_select_within_token_budget(spark):
         edge, "doc_id", "n_tokens", budget=20, priority_col="pri"
     ).collect()}
     assert sel == {1: True, 2: True}
+
+
+@pytest.mark.parametrize("n_blocks", [4, 5])
+def test_select_within_token_budget_null_tokens_match_sql(
+    spark, monkeypatch, n_blocks
+):
+    """NULL token counts follow SQL's running SUM at any block layout:
+    every 10th doc is NULL, so at 4 and at 5 blocks NULL rows open range
+    blocks, and doc 0 is an all-NULL prefix."""
+    import duckdb
+    from pyspark import SparkContext
+
+    from baskerville_spark.functions.sampling import select_within_token_budget
+
+    monkeypatch.setattr(
+        SparkContext, "defaultParallelism", property(lambda self: n_blocks)
+    )
+    rows = [(i, None if i % 10 == 0 else 5 + i % 13, i // 2) for i in range(200)]
+    got = {
+        r["doc_id"]: (r["cum_tokens"], r["selected"])
+        for r in select_within_token_budget(
+            spark.createDataFrame(rows, "doc_id int, n_tok int, pri int"),
+            "doc_id", "n_tok", budget=900, priority_col="pri",
+        ).collect()
+    }
+    con = duckdb.connect()
+    con.execute("CREATE TABLE d (doc_id INT, n_tok INT, pri INT)")
+    con.executemany("INSERT INTO d VALUES (?, ?, ?)", rows)
+    want = {
+        r[0]: (r[1], r[2])
+        for r in con.execute(
+            "SELECT doc_id, c, c <= 900 FROM (SELECT doc_id, CAST(SUM(n_tok)"
+            " OVER (ORDER BY pri, doc_id ROWS UNBOUNDED PRECEDING) AS BIGINT)"
+            " AS c FROM d)"
+        ).fetchall()
+    }
+    assert want[0] == (None, None)
+    assert got == want

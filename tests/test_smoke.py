@@ -12,6 +12,23 @@ def test_generator_counts(t1_clips, t1_cfg):
     assert parts == set(range(t1_cfg.n_parts))
 
 
+def test_rows_from_range_drops_a_whole_partition(spark):
+    """A range partition whose indices are all dropped yields a typed,
+    empty batch: the frame holds the other rows, fan-out included."""
+    from baskerville_spark.generator import rows_from_range
+
+    def rows(i):
+        if i < 10:  # the whole first of 4 range partitions over 40 ids
+            return []
+        return [{"k": i, "name": f"r{i}"}] * (2 if i % 7 == 0 else 1)
+
+    df = rows_from_range(spark, 40, rows, "k long, name string", 4)
+    assert df.schema.simpleString() == "struct<k:bigint,name:string>"
+    assert sorted(tuple(r) for r in df.collect()) == sorted(
+        (i, f"r{i}") for i in range(10, 40) for _ in range(2 if i % 7 == 0 else 1)
+    )
+
+
 def test_end_to_end_verdicts(spark, t1_clips, t1_tref, t1_cfg):
     res = run_validation(spark, t1_clips, t1_tref, cfg=ValidationConfig())
     verdicts = res.verdicts.collect()
@@ -308,6 +325,51 @@ def test_gate_registry_snapshot():
     assert all(fn.__name__ == k for k, fn in qs.items())
     got = {k: hashlib.sha256(v.encode()).hexdigest() for k, v in oracles.items()}
     assert [[k, got[k]] for k, _ in want] == want
+
+
+#: Audio gates whose fixtures are planted through
+#: ``generator.rows_from_range``; none of them reads ``sf_dir``.
+_PLANTED_AUDIO_GATES = (
+    "q83_loudness_stats", "q84_spectral_features", "q85_resample",
+    "q87_downmix", "q88_trim_silence", "q89_segment", "q90_normalize",
+    "q91_overlay", "q92_pitch", "q105_split_on_silence", "q109_audio_align",
+    "q111_bandwidth", "q113_mulaw_roundtrip", "q117_vad_stats",
+    "q131_dc_offset", "q134_channel_balance",
+)
+
+
+def test_planted_audio_gates_match_oracles(spark, tmp_path):
+    """Each planted audio gate equals its oracle in a DuckDB connection
+    with no tables, compared the way ``scripts/check_oracle.py`` compares
+    (result types by class, rows order-insensitive)."""
+    import importlib.util
+    import sys
+    from pathlib import Path
+
+    import duckdb
+
+    root = Path(__file__).resolve().parents[1]
+    sys.path.insert(0, str(root))
+    import __spark_entry__ as m
+
+    saved = list(sys.path)  # check_oracle prepends its own source dir
+    spec = importlib.util.spec_from_file_location(
+        "check_oracle", root / "scripts" / "check_oracle.py"
+    )
+    co = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(co)
+    sys.path[:] = saved
+
+    con = duckdb.connect()
+    qs, oracles = m.queries(), m.oracle_sql()
+    for name in _PLANTED_AUDIO_GATES:
+        sdf = qs[name](spark, str(tmp_path / "no-sf-dir"))
+        res = con.sql(oracles[name])
+        otypes = [str(t) for t in res.types]
+        assert co.type_check(name, sdf.columns, sdf.dtypes,
+                             res.columns, otypes) == [], name
+        got = co.norm_rows(sdf.columns, [tuple(r) for r in sdf.collect()])
+        assert got == co.norm_rows(list(res.columns), res.fetchall()), name
 
 
 def test_shared_clip_fixture_keys_on_whole_config(monkeypatch):
