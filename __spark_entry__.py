@@ -67,16 +67,13 @@ def _stream_shuffle(spark: SparkSession):
     trigger paid 32 state-store commits + 32 near-empty tasks per stateful
     stage (measured q64: 13.4s -> 5.3s at local[32]). Partition count is a
     function of state size (guide §2.2), so the gate value is independent of
-    cluster width; production streams size via BASK_STREAM_STATE_PARTITIONS
-    or their own session conf. Restores the batch setting on exit."""
-    import os
+    cluster width; production streams size it through their own session
+    conf. Restores the batch setting on exit."""
     from contextlib import contextmanager
 
     @contextmanager
     def _cm():
-        target = int(
-            os.environ.get("BASK_STREAM_STATE_PARTITIONS", "0")
-        ) or min(8, spark.sparkContext.defaultParallelism)
+        target = min(8, spark.sparkContext.defaultParallelism)
         old = spark.conf.get("spark.sql.shuffle.partitions")
         spark.conf.set("spark.sql.shuffle.partitions", str(target))
         try:

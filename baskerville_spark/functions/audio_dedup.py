@@ -92,9 +92,12 @@ def envelope_fingerprint(pcm: np.ndarray) -> int:
     return fp
 
 
+def _content_md5(pcm: np.ndarray) -> str:
+    return hashlib.md5(pcm.astype("<i2").tobytes()).hexdigest()
+
+
 def _fingerprints(pcm: np.ndarray) -> tuple:
-    md5 = hashlib.md5(pcm.astype("<i2").tobytes()).hexdigest()
-    return md5, envelope_fingerprint(pcm)
+    return _content_md5(pcm), envelope_fingerprint(pcm)
 
 
 def audio_content_fingerprints(clips: DataFrame) -> DataFrame:
@@ -242,6 +245,16 @@ def audio_align_offsets(
     return joined.mapInArrow(_align, schema=ALIGN_SCHEMA)
 
 
+LABELED_SCHEMA = T.StructType(
+    [
+        T.StructField("clip_id", T.StringType(), False),
+        T.StructField("transcript", T.StringType(), True),
+        T.StructField("decode_ok", T.BooleanType(), False),
+        T.StructField("content_md5", T.StringType(), True),
+    ]
+)
+
+
 def conflicting_label_groups(clips: DataFrame) -> DataFrame:
     """Label-noise detection: clips whose DECODED audio content is
     identical but whose transcripts disagree — the training-data bug that
@@ -253,27 +266,38 @@ def conflicting_label_groups(clips: DataFrame) -> DataFrame:
     the audio graft cell.
 
     Plan shape (10^12-clip scale): one mapInArrow decode pass emits narrow
-    (content_md5, clip_id) rows — payloads never shuffle; transcripts join
-    on clip_id BEFORE grouping so the grouped rows stay narrow; one hash
-    aggregate per content_md5 computes countDistinct(transcript); the
-    conflicting-group set is bounded by the planted-noise rate, so the
+    (clip_id, transcript, content_md5) rows — payloads never shuffle, and
+    each transcript rides with its own payload: ``clip_id`` is not a
+    certain key (duplicate ids are what the uniqueness check finds), so a
+    join back on it would pair one clip's content with another's label.
+    One hash aggregate per content_md5 computes countDistinct(transcript);
+    the conflicting-group set is bounded by the planted-noise rate, so the
     member back-join broadcasts it (AQE at real scale). Group sizes are
     bounded by the corpus duplication factor, never by corpus size, so
     the exact countDistinct cannot blow a reducer.
+
+    A NULL transcript is no label: countDistinct skips it, so a NULL copy
+    beside a labelled copy of the same content is not a conflict.
 
     Returns one violation row per MEMBER of a conflicting group:
     (group_key, clip_id, n_labels) with group_key = min(clip_id) of the
     group — a deterministic name both engines can derive.
     """
     audio.require_cols(clips, ("clip_id", "bytes", "codec", "transcript"))
-    fps = audio_content_fingerprints(clips)
     # persist the narrow labeled frame: both the group aggregate and the
     # member back-join derive from it — unpersisted, the DECODE pass (the
     # expensive leg) runs twice (persisted-intermediate convention; freed
     # by the session's LRU / clearCache)
-    labeled = fps.where(F.col("decode_ok")).select("content_md5", "clip_id").join(
-        clips.select("clip_id", "transcript"), "clip_id"
-    ).persist()
+    labeled = (
+        audio.decode_pass(
+            clips.select("clip_id", "transcript", "bytes", "codec"),
+            LABELED_SCHEMA,
+            lambda pcm: (_content_md5(pcm),),
+        )
+        .where(F.col("decode_ok"))
+        .select("content_md5", "clip_id", "transcript")
+        .persist()
+    )
     groups = (
         labeled.groupBy("content_md5")
         .agg(

@@ -69,7 +69,6 @@ class ValidationConfig:
     ks_threshold: float = drift_mod.KS_THRESHOLD
     n_salt: int = 64
     ri_strategy: str = "auto"
-    snr_violation_rate_max: float = 0.0   # any SNR failure fails the partition
     check_audio: bool = True
     numeric_cols: tuple = ("sr_hz", "dur_ms")
     categorical_cols: tuple = ("codec",)
@@ -166,15 +165,14 @@ def run_validation(
     transcript_ref: DataFrame | None = None,
     baseline_rows: list[Row] | None = None,
     cfg: ValidationConfig | None = None,
-    persist_intermediate: bool = True,
 ) -> ValidationResult:
     """Build the verdict / violation / stats plans for the clip table.
 
-    ``persist_intermediate`` caches the NARROW check outputs (violation rows,
-    invariant results — tiny relative to input) so materializing verdicts and
-    violations does not re-run the expensive scans (in particular the audio
-    decode). At cluster scale the equivalent is writing these intermediates
-    to the results table and reading back — same O(output) cost.
+    The NARROW check outputs (violation rows, invariant results — tiny
+    relative to input) are cached, so materializing verdicts and violations
+    does not re-run the expensive scans (in particular the audio decode).
+    At cluster scale the equivalent is writing these intermediates to the
+    results table and reading back — same O(output) cost.
     """
     cfg = cfg or ValidationConfig()
     persisted: list[DataFrame] = []
@@ -186,22 +184,18 @@ def run_validation(
     # audio invariant touches `bytes`. At cluster scale the same projection
     # is a cheap shuffle-free stage whose output is a few % of table size.
     meta_cols = ["part_id", "clip_id", "sr_hz", "dur_ms", "codec", "transcript"]
-    slim = clips.select(*[c for c in meta_cols if c in clips.columns])
-    if persist_intermediate:
-        slim = slim.persist()
-        persisted.append(slim)
-        slim.count()  # eager fill — see the violations note below
+    slim = clips.select(*[c for c in meta_cols if c in clips.columns]).persist()
+    persisted.append(slim)
+    slim.count()  # eager fill — see the violations note below
 
     # --- stats ---
     st = stats.column_stats(
         slim,
         numeric_cols=list(cfg.numeric_cols),
         other_cols=["clip_id", "codec", "transcript"],
-    )
-    if persist_intermediate:
-        st = st.persist()  # tiny (parts × cols); feeds several verdict branches
-        persisted.append(st)
-        # eager fill happens below, CONCURRENTLY with the violations fill
+    ).persist()  # tiny (parts × cols); feeds several verdict branches
+    persisted.append(st)
+    # eager fill happens below, CONCURRENTLY with the violations fill
     verdicts = stats.stats_verdicts(st, cfg.null_rate_max, cfg.range_bounds)
 
     # per-partition row counts derived from stats — no extra scan of the fact
@@ -246,7 +240,7 @@ def run_validation(
         check_names.append("speaking_rate")
 
     inv = inv_mod.audio_invariant(clips, transcript_ref) if cfg.check_audio else None
-    if inv is not None and cfg.emit_audio_states and persist_intermediate:
+    if inv is not None and cfg.emit_audio_states:
         # two consumers of the decode pass (violations + audio states):
         # cache the narrow per-clip rows so audio is decoded exactly once.
         # Eager fill happens below (subtree caches don't reliably populate
@@ -289,35 +283,34 @@ def run_validation(
     violations = violation_dfs[0]
     for v in violation_dfs[1:]:
         violations = violations.unionByName(v)
-    if persist_intermediate:
-        # persist AND materialize eagerly: when the cached plan is first
-        # executed as a subtree of the much larger verdicts DAG, the cache
-        # does not reliably populate (observed under AQE) and every
-        # downstream action re-runs the full check scans including the audio
-        # decode. One explicit action here fills the cache; every verdict /
-        # caller action after it reads O(violations) rows only.
-        #
-        # The fills run CONCURRENTLY (guide §2.6 — independent jobs
-        # back-fill each other's task tails): stats and the decode-bearing
-        # frame share only the already-filled slim cache. When the audio
-        # states ride the decode pass, `inv` is the decode-bearing frame and
-        # the violations fill afterwards reads its cache (decode exactly
-        # once); otherwise violations itself carries the decode.
-        violations = violations.persist()
-        persisted.append(violations)
-        from concurrent.futures import ThreadPoolExecutor
+    # persist AND materialize eagerly: when the cached plan is first
+    # executed as a subtree of the much larger verdicts DAG, the cache
+    # does not reliably populate (observed under AQE) and every
+    # downstream action re-runs the full check scans including the audio
+    # decode. One explicit action here fills the cache; every verdict /
+    # caller action after it reads O(violations) rows only.
+    #
+    # The fills run CONCURRENTLY (guide §2.6 — independent jobs
+    # back-fill each other's task tails): stats and the decode-bearing
+    # frame share only the already-filled slim cache. When the audio
+    # states ride the decode pass, `inv` is the decode-bearing frame and
+    # the violations fill afterwards reads its cache (decode exactly
+    # once); otherwise violations itself carries the decode.
+    violations = violations.persist()
+    persisted.append(violations)
+    from concurrent.futures import ThreadPoolExecutor
 
-        first: list[DataFrame] = [st]
-        second: DataFrame | None = None
-        if inv is not None and cfg.emit_audio_states:
-            first.append(inv)
-            second = violations
-        else:
-            first.append(violations)
-        with ThreadPoolExecutor(max_workers=len(first)) as pool:
-            list(pool.map(lambda df: df.count(), first))
-        if second is not None:
-            second.count()
+    first: list[DataFrame] = [st]
+    second: DataFrame | None = None
+    if inv is not None and cfg.emit_audio_states:
+        first.append(inv)
+        second = violations
+    else:
+        first.append(violations)
+    with ThreadPoolExecutor(max_workers=len(first)) as pool:
+        list(pool.map(lambda df: df.count(), first))
+    if second is not None:
+        second.count()
 
     verdicts = verdicts.unionByName(
         _violation_verdicts(violations, part_rows, check_names)

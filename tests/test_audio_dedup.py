@@ -693,6 +693,9 @@ def test_conflicting_label_groups(spark):
 
     pcm_a = audio.synth_pcm("lblA", 8000, 80)
     pcm_b = audio.synth_pcm("lblB", 8000, 80)
+    pcm_c, pcm_d, pcm_e = (
+        audio.synth_pcm(k, 8000, 80) for k in ("lblC", "lblD", "lblE")
+    )
     rows = [
         # same decoded content across containers, DISAGREEING labels
         ("c1", bytearray(audio.encode(pcm_a, "pcm_s16le")), "pcm_s16le", "hello"),
@@ -702,6 +705,14 @@ def test_conflicting_label_groups(spark):
         ("c4", bytearray(audio.encode(pcm_b, "flac")), "flac", "x y"),
         # undecodable payload never forms a group
         ("c5", bytearray(b"\x00\x01"), "mp3", "junk"),
+        # a repeated clip_id over two different contents: each transcript
+        # stays with its own payload, so no content has two labels
+        ("d1", bytearray(audio.encode(pcm_c, "pcm_s16le")), "pcm_s16le", "hello"),
+        ("d1", bytearray(audio.encode(pcm_d, "pcm_s16le")), "pcm_s16le", "world"),
+        ("d2", bytearray(audio.encode(pcm_c, "flac")), "flac", "hello"),
+        # a NULL transcript is no label: beside a labelled copy, no conflict
+        ("n1", bytearray(audio.encode(pcm_e, "pcm_s16le")), "pcm_s16le", "lbl"),
+        ("n2", bytearray(audio.encode(pcm_e, "flac")), "flac", None),
     ]
     df = spark.createDataFrame(
         rows, "clip_id string, bytes binary, codec string, transcript string"

@@ -130,9 +130,7 @@ def test_verdict_plan_schema_and_no_python_rdd(spark, tmp_path):
 
     clips_p = str(tmp_path / "clips")
     write_clips(spark, clips_p, CFG)
-    res = run_validation(
-        spark, spark.read.parquet(clips_p), persist_intermediate=False
-    )
+    res = run_validation(spark, spark.read.parquet(clips_p))
     assert [
         (f.name, f.dataType.simpleString(), f.nullable)
         for f in res.verdicts.schema.fields
@@ -147,6 +145,7 @@ def test_verdict_plan_schema_and_no_python_rdd(spark, tmp_path):
     ]
     plan = res.verdicts._jdf.queryExecution().executedPlan().toString()
     assert "ExistingRDD" not in plan
+    res.unpersist()
 
 
 def test_delete_pending_sink_dirs(spark, tmp_path):
