@@ -35,7 +35,7 @@ from pyspark.sql import types as T
 
 from baskerville_spark import audio
 
-__all__ = ["decode_state", "state_from_per_clip", "merge_decode_states"]
+__all__ = ["decode_state", "per_clip_state", "state_from_per_clip", "merge_decode_states"]
 
 _PER_CLIP_SCHEMA = T.StructType(
     [
@@ -69,11 +69,16 @@ def decode_state(
     Decode success follows ``audio.decode_pass`` — the rule the invariant
     reports — so an empty payload counts as failed on both paths.
     """
-    per_clip = audio.decode_pass(
+    return state_from_per_clip(per_clip_state(clips), group_by)
+
+
+def per_clip_state(clips: DataFrame) -> DataFrame:
+    """The decode pass behind ``decode_state``: one (part_id, decode_ok,
+    n_samples, clipped_samples, sum_abs) row per clip."""
+    return audio.decode_pass(
         clips.select("part_id", "bytes", "codec"), _PER_CLIP_SCHEMA,
         state_kernel, fail=STATE_FAIL,
     )
-    return state_from_per_clip(per_clip, group_by)
 
 
 def state_from_per_clip(

@@ -243,7 +243,11 @@ def out_of_order_stats(
     sequence (no global sort — each key sorts independently inside its
     hash partition), then one hash aggregate per key. NULL ts never
     counts as late (NULL < x is NULL -> 0) and never advances the
-    running max. Returns (key, n_events, n_late, late_frac, flagged).
+    running max. The same holds for a NULL sequence: such a row has no
+    place in the ingest order (the ascending window sorts it first), so
+    it never counts as late and its ts never enters the running max; it
+    still counts in n_events. Returns (key, n_events, n_late, late_frac,
+    flagged).
     """
     from pyspark.sql import Window
 
@@ -252,7 +256,9 @@ def out_of_order_stats(
         .orderBy(seq_col)
         .rowsBetween(Window.unboundedPreceding, -1)
     )
-    late = F.when(F.col(ts_col) < F.max(ts_col).over(w), 1).otherwise(0)
+    sequenced = F.col(seq_col).isNotNull()
+    running_max = F.max(F.when(sequenced, F.col(ts_col))).over(w)
+    late = F.when(sequenced & (F.col(ts_col) < running_max), 1).otherwise(0)
     frac = F.round(
         F.col("n_late").cast("double") / F.col("n_events").cast("double"), 6
     )

@@ -77,16 +77,6 @@ def cosine_topk(
     )
 
 
-def srp_signature(vec_col: Column, planes: np.ndarray) -> Column:
-    """Sign-random-projection bucket id: one bit per hyperplane."""
-    sig = F.lit(0).cast("long")
-    for i, plane in enumerate(planes):
-        p = F.array(*[F.lit(float(x)) for x in plane])
-        bit = (_dot(vec_col, p) > 0).cast("long")
-        sig = sig.bitwiseOR(F.shiftleft(bit, i))
-    return sig
-
-
 def hyperplane_lsh_pairs(
     df: DataFrame,
     id_col: str = "vec_id",

@@ -253,9 +253,7 @@ def expected_violation_indices(cfg: GenConfig) -> dict[str, list[int]]:
     return out
 
 
-def write_clips(
-    spark: SparkSession, path: str, cfg: GenConfig, files_per_part: int = 2
-) -> None:
+def write_clips(spark: SparkSession, path: str, cfg: GenConfig) -> None:
     """Write partitioned by part_id.
 
     Generator range-splits are contiguous and part assignment is contiguous,
@@ -263,7 +261,6 @@ def write_clips(
     ~n_tasks + n_parts without any shuffle (production: Iceberg
     write.target-file-size governs this).
     """
-    _ = files_per_part
     generate_clips(spark, cfg).write.mode("overwrite").partitionBy("part_id").parquet(path)
 
 

@@ -90,10 +90,15 @@ def cmd_validate(args) -> int:
     if processed:
         from pyspark.sql import functions as F
 
+        from baskerville_spark.runtime.manifest import read_manifest
+
+        # the per-partition row counts this run committed: no second scan
+        # of the clip table
         n_rows = (
-            spark.read.parquet(args.clips)
+            read_manifest(spark, args.manifest)
             .where(F.col("part_id").isin(processed))
-            .count()
+            .agg(F.sum("n_rows"))
+            .first()[0]
         )
     print(
         json.dumps(

@@ -1,4 +1,5 @@
-"""Validation runner: composes all checks into verdicts + violations + stats.
+"""Validation runner: one table of built-in checks compiled into verdicts +
+violations + stats, and the resumable run around it.
 
 Query-lifecycle parity with the reference's fixed step DAG
 ``preprocessing → group_by → feature_calculation → label_or_predict → save``
@@ -8,42 +9,59 @@ DataFrame plans:
   schema-enforce → [stats agg | uniqueness agg | RI anti-join |
                     drift agg | audio-invariant mapInArrow] → verdicts/violations
 
+The check table: ``CHECKS`` holds one row per built-in check — the verdict
+check names (or the sink) it owns, the inputs it reads, when it is enabled
+(a predicate on the config and the caller's frames) and its builder, whose
+projection is SQL text (``checks/sqltext``). ``run_validation`` compiles it:
+every violation row joins one union whose check names form the pass/fail
+grid, every verdict row one verdict union. Each input (``_INPUTS``: the slim
+projection, its stats, the transcript dimension, the baseline, the decode
+pass) is built at most once and only when an enabled row reads it; an input
+that two or more consumers read is persisted and filled eagerly, so no clip
+is decoded twice. ``_resolve`` alone picks the fallbacks when the invariant
+is off. Adding a check means one row in ``CHECKS`` plus one test.
+
 Scale design (100 TB):
 - ONE payload-free projection of the fact table is materialized and feeds
-  every metadata check (stats/uniqueness/RI/pattern/drift); only the audio
-  invariant scans ``bytes``. Column pruning alone is NOT enough when blobs
-  are colocated in the same files — the pruned scan still seeks around the
-  blob chunks (measured 6x slower than a slim table) — so paying one such
-  pass instead of five is the dominant win. The projection is a few % of
-  table size; on a cluster it persists MEMORY_AND_DISK or lands in a temp
-  table.
-- There is exactly one shuffle per aggregate check, keyed on part_id (or
-  (part_id, clip_id) for uniqueness), with map-side partial aggregation.
-- Verdict/violation outputs are tiny relative to input; unions of them are
-  cheap.
+  every metadata check (stats/uniqueness/RI/pattern/drift); only the decode
+  pass scans ``bytes``. Column pruning alone is NOT enough when blobs are
+  colocated in the same files — the pruned scan still seeks around the blob
+  chunks (measured 6x slower than a slim table). The projection is a few %
+  of table size; on a cluster it persists MEMORY_AND_DISK or lands in a
+  temp table.
+- Exactly one shuffle per aggregate check, keyed on part_id (or (part_id,
+  clip_id) for uniqueness), with map-side partial aggregation. Verdict and
+  violation outputs are tiny relative to input; their unions are cheap.
 - Resume: partition pruning via a ``part_id IN (pending)`` predicate — with
   parquet `partitionBy(part_id)` layout (or Iceberg partition specs) the
   done partitions are never read at all.
 - Sinks are rebalanced on part_id before their writes, so AQE sizes the
-  write tasks by output volume (one file per partition directory at small
-  scale) instead of inheriting the inputs' partition counts. The manifest's
-  per-partition metrics come from the in-memory verdict plan, never from a
-  read-back of the written sink.
+  write tasks by output volume instead of inheriting the inputs' partition
+  counts. The manifest's per-partition metrics come from the in-memory
+  verdict plan, never from a read-back of the written sink.
 """
 
 from __future__ import annotations
 
 import json
 import sys
+from collections import Counter, defaultdict
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 from datetime import datetime, timezone
+from functools import reduce
+from typing import Callable, NamedTuple
 
 from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 
+from baskerville_spark.checks import audio_state as audio_state_mod
+from baskerville_spark.checks import consistency
 from baskerville_spark.checks import drift as drift_mod
 from baskerville_spark.checks import invariants as inv_mod
 from baskerville_spark.checks import referential, sqltext, stats, uniqueness
+from baskerville_spark.checks import stats_state as stats_state_mod
+from baskerville_spark.checks import suite as suite_mod
 from baskerville_spark.checks.schema_check import ColumnSpec, pattern_violations
 from baskerville_spark.runtime import manifest as manifest_mod
 
@@ -58,6 +76,16 @@ CLIP_SPECS = [
     ColumnSpec("transcript", "string"),
 ]
 
+#: the payload-free projection every metadata check reads
+META_COLS = ("part_id", "clip_id", "sr_hz", "dur_ms", "codec", "transcript")
+#: categorical columns of the chi2 mix check, judged on Cramér's V: 0.2 is a
+#: "medium effect" (the PSI_THRESHOLD convention). A hot drifted partition
+#: also lifts every clean partition's complement V; the bound clears that.
+CATEGORICAL_COLS = ("codec",)
+CRAMERS_V_MAX = 0.2
+#: columns whose HLL sketch rides the mergeable state rows
+STATE_DISTINCT_COLS = ("clip_id",)
+
 
 @dataclass(frozen=True)
 class ValidationConfig:
@@ -65,13 +93,9 @@ class ValidationConfig:
     range_bounds: dict = field(
         default_factory=lambda: {"dur_ms": (1.0, 30000.0), "sr_hz": (8000.0, 48000.0)}
     )
-    psi_threshold: float = drift_mod.PSI_THRESHOLD
-    ks_threshold: float = drift_mod.KS_THRESHOLD
     n_salt: int = 64
-    ri_strategy: str = "auto"
     check_audio: bool = True
     numeric_cols: tuple = ("sr_hz", "dur_ms")
-    categorical_cols: tuple = ("codec",)
     # metadata-consistency checks (checks/consistency.py); off by default so
     # existing verdict grids (and their closed-form oracles) are unchanged
     check_payload_bytes: bool = False
@@ -82,7 +106,6 @@ class ValidationConfig:
     # instead of rescanning settled partitions. Off by default — existing
     # verdict grids and sink layouts are unchanged.
     emit_states: bool = False
-    state_distinct_cols: tuple = ("clip_id",)
     state_hist_edges: dict = field(default_factory=dict)  # col -> bin edges
     # per-partition chi-squared homogeneity of each categorical column's
     # mix vs the REST of the table (checks/drift.chi2_homogeneity) —
@@ -90,20 +113,13 @@ class ValidationConfig:
     # "significant" at 10^12 rows), verdict rows chi2:<col>. Off by
     # default so existing verdict grids/oracles are unchanged.
     check_categorical_mix: bool = False
-    # 0.2 = "medium effect" (same convention as PSI_THRESHOLD); note a hot
-    # drifted partition also contaminates every clean partition's
-    # complement, lifting their V — the threshold must clear that floor
-    cramers_v_max: float = 0.2
     # additive decode-QA states (checks/audio_state.py) to {out}/audio_states
-    # — one decode pass per ingest batch, settled clips never re-decoded.
-    # Requires check_audio-capable input (a bytes column).
+    # — settled clips are never re-decoded. Needs a bytes column.
     emit_audio_states: bool = False
-    # user-declared constraint suite (checks/suite.py Constraints — e.g.
-    # parsed from JSON config via suite_from_json): compiled into ONE extra
-    # aggregation pass over the SAME persisted payload-free projection and
-    # unioned into the verdict grid as suite:<name> rows. Constraints may
-    # reference only metadata columns (part_id, clip_id, sr_hz, dur_ms,
-    # codec, transcript) — a payload reference fails resolution loudly.
+    # user-declared constraint suite (checks/suite.py Constraints, e.g. from
+    # suite_from_json): ONE extra aggregate over the slim projection, as
+    # suite:<name> verdict rows. Constraints may reference only META_COLS —
+    # a payload reference fails resolution loudly.
     extra_suite: tuple = ()
 
 
@@ -159,6 +175,149 @@ def _violation_verdicts(
     )
 
 
+class _Given(NamedTuple):  # the caller's frames
+    clips: DataFrame
+    tref: DataFrame | None
+    baseline: list | None
+
+
+#: input name -> (inputs it reads, builder(given, cfg, *those inputs)).
+#: ``tref`` and ``baseline`` are the caller's: never built, never persisted.
+_INPUTS: dict[str, tuple[tuple[str, ...], Callable]] = {
+    "slim": ((), lambda g, cfg: g.clips.select(
+        *[c for c in META_COLS if c in g.clips.columns])),
+    "stats": (("slim",), lambda g, cfg, slim: stats.column_stats(
+        slim, numeric_cols=list(cfg.numeric_cols),
+        other_cols=["clip_id", "codec", "transcript"])),
+    "tref": ((), lambda g, cfg: g.tref),
+    "baseline": ((), lambda g, cfg: g.baseline),
+    # byte_len and the echoed metadata ride out of the decode pass, so the
+    # byte check needs no clip_id join back to slim (clip_id is not unique:
+    # a join would cross-match duplicate rows)
+    "decode": ((), lambda g, cfg: inv_mod.audio_invariant(g.clips, g.tref)),
+    "byte_scan": ((), lambda g, cfg: g.clips.selectExpr(
+        "part_id", "clip_id", "codec", "sr_hz", "dur_ms",
+        "length(bytes) AS byte_len")),
+    "state_pass": ((), lambda g, cfg: audio_state_mod.per_clip_state(g.clips)),
+}
+_GIVEN = ("tref", "baseline")
+
+
+def _resolve(name: str, cfg: ValidationConfig) -> str:
+    """The input behind a row's logical input: with the invariant on, the
+    byte check and the audio states read its decode pass; without it they
+    fall back to a byte-length scan and a decode pass of their own."""
+    if name in ("byte_len", "clip_state"):
+        if cfg.check_audio:
+            return "decode"
+        return "byte_scan" if name == "byte_len" else "state_pass"
+    return name
+
+
+@dataclass(frozen=True)
+class Check:
+    """One built-in check: a row of ``CHECKS``."""
+
+    owns: tuple          # verdict check names (exact for violation rows) or the sink
+    sink: str            # violations | verdicts | states | audio_states
+    reads: tuple         # logical inputs handed to ``build`` after cfg
+    enabled: Callable[[ValidationConfig, _Given], bool]
+    build: Callable[..., DataFrame]
+
+
+def _speaking_rate(cfg: ValidationConfig, slim: DataFrame) -> DataFrame:
+    lo, hi = cfg.speaking_rate_bounds
+    return consistency.speaking_rate_violations(slim, min_cps=lo, max_cps=hi).selectExpr(
+        "part_id", "clip_id", "check_name",
+        "concat('chars_per_sec=', CAST(chars_per_sec AS STRING)) AS detail",
+    )
+
+
+def _payload_bytes(cfg: ValidationConfig, per_clip: DataFrame) -> DataFrame:
+    return consistency.payload_byte_violations(per_clip).selectExpr(
+        "part_id", "clip_id", "check_name",
+        "concat('byte_len=', CAST(byte_len AS STRING),"
+        " ' expected=', CAST(expected_bytes AS STRING)) AS detail",
+    )
+
+
+def _categorical_mix(cfg: ValidationConfig, slim: DataFrame) -> DataFrame:
+    v = sqltext.lit(CRAMERS_V_MAX)
+    return reduce(DataFrame.unionByName, [
+        drift_mod.chi2_homogeneity(slim, "part_id", c).selectExpr(
+            "CAST(part_id AS INT) AS part_id",
+            f"{sqltext.lit(f'chi2:{c}')} AS check_name",
+            # single-partition tables (n_rest = 0) have no complement to
+            # test against: undefined, not failed
+            f"coalesce(cramers_v <= {v}, true) AS passed",
+            "CAST(cramers_v AS DOUBLE) AS metric_value",
+            f"{v} AS threshold",
+            "CAST(n_group AS BIGINT) AS n_rows",
+            "CAST(NULL AS BIGINT) AS n_violations",
+        )
+        for c in CATEGORICAL_COLS
+    ])
+
+
+def _suite(cfg: ValidationConfig, slim: DataFrame) -> DataFrame:
+    return suite_mod.run_suite(slim, list(cfg.extra_suite), group_by=["part_id"]).selectExpr(
+        "CAST(part_id AS INT) AS part_id",
+        "concat('suite:', check_name) AS check_name",
+        "passed", "metric_value", "threshold", "n_rows", "n_violations",
+    )
+
+
+def _states(cfg: ValidationConfig, slim: DataFrame) -> DataFrame:
+    return stats_state_mod.stats_state(
+        slim, ["part_id"], list(cfg.numeric_cols),
+        [c for c in STATE_DISTINCT_COLS if c in slim.columns],
+        hist_cols=dict(cfg.state_hist_edges) or None,
+    )
+
+
+#: Every built-in check, in union order.
+CHECKS: tuple[Check, ...] = (
+    Check(("null_rate:*", "range:*"), "verdicts", ("stats",), lambda cfg, g: True,
+          lambda cfg, st: stats.stats_verdicts(st, cfg.null_rate_max, cfg.range_bounds)),
+    Check(("uniqueness",), "violations", ("slim",), lambda cfg, g: True,
+          lambda cfg, slim: uniqueness.uniqueness_violations(slim, n_salt=cfg.n_salt)),
+    Check(("ref_integrity",), "violations", ("slim", "tref"),
+          lambda cfg, g: g.tref is not None,
+          lambda cfg, slim, tref: referential.ref_integrity_violations(slim, tref)),
+    Check(tuple(f"pattern:{s.name}" for s in CLIP_SPECS if s.pattern),
+          "violations", ("slim",),
+          lambda cfg, g: any(s.pattern and s.name in g.clips.columns
+                             for s in CLIP_SPECS),
+          lambda cfg, slim: pattern_violations(slim, CLIP_SPECS)),
+    Check(("speaking_rate",), "violations", ("slim",),
+          lambda cfg, g: cfg.check_speaking_rate, _speaking_rate),
+    Check(("snr", "decode_error", "transcript_eq"), "violations", ("decode",),
+          lambda cfg, g: cfg.check_audio,
+          lambda cfg, inv: inv_mod.invariant_violations(inv)),
+    Check(("payload_bytes",), "violations", ("byte_len",),
+          lambda cfg, g: cfg.check_payload_bytes, _payload_bytes),
+    Check(("psi:*", "ks:*"), "verdicts", ("slim", "baseline"),
+          lambda cfg, g: bool(g.baseline),
+          lambda cfg, slim, base: drift_mod.drift_verdicts(slim, base)),
+    Check(tuple(f"chi2:{c}" for c in CATEGORICAL_COLS), "verdicts", ("slim",),
+          lambda cfg, g: cfg.check_categorical_mix, _categorical_mix),
+    Check(("suite:*",), "verdicts", ("slim",), lambda cfg, g: bool(cfg.extra_suite), _suite),
+    Check(("states",), "states", ("slim",), lambda cfg, g: cfg.emit_states, _states),
+    Check(("audio_states",), "audio_states", ("clip_state",),
+          lambda cfg, g: cfg.emit_audio_states,
+          lambda cfg, per_clip: audio_state_mod.state_from_per_clip(per_clip)),
+)
+
+
+def _fill(dfs: list[DataFrame]) -> None:
+    """Fill persisted frames eagerly: a cache first executed as a subtree
+    of a larger plan does not reliably populate (observed under AQE). Frames
+    filled together run CONCURRENTLY, so independent jobs back-fill each
+    other's task tails (guide §2.6)."""
+    with ThreadPoolExecutor(max_workers=len(dfs)) as pool:
+        list(pool.map(lambda df: df.count(), dfs))
+
+
 def run_validation(
     spark: SparkSession,
     clips: DataFrame,
@@ -166,232 +325,70 @@ def run_validation(
     baseline_rows: list[Row] | None = None,
     cfg: ValidationConfig | None = None,
 ) -> ValidationResult:
-    """Build the verdict / violation / stats plans for the clip table.
+    """Compile ``CHECKS`` into the verdict / violation / stats plans.
 
-    The NARROW check outputs (violation rows, invariant results — tiny
-    relative to input) are cached, so materializing verdicts and violations
+    Shared inputs and the NARROW violation rows (tiny relative to input)
+    are cached and filled eagerly, so materializing verdicts and violations
     does not re-run the expensive scans (in particular the audio decode).
     At cluster scale the equivalent is writing these intermediates to the
     results table and reading back — same O(output) cost.
     """
     cfg = cfg or ValidationConfig()
+    given = _Given(clips, transcript_ref, baseline_rows)
+    rows = [c for c in CHECKS if c.enabled(cfg, given)]
+    reads = [[_resolve(n, cfg) for n in c.reads] for c in rows]
+
+    # consumers per input: enabled rows, the inputs built on it, and the
+    # stats sink plus the violation grid's row counts (both read `stats`)
+    uses = Counter(n for r in reads for n in r) + Counter(stats=2)
+    needed = list(uses)
+    for n in needed:  # grows while it is walked
+        for dep in _INPUTS[n][0]:
+            uses[dep] += 1
+            if dep not in needed:
+                needed.append(dep)
+    shared = [n for n in _INPUTS if n not in _GIVEN and uses[n] >= 2]
+
+    frames: dict[str, DataFrame] = {}
     persisted: list[DataFrame] = []
 
-    # Materialize the payload-free projection ONCE: with audio blobs
-    # colocated in the same parquet files, even a pruned metadata scan pays
-    # a seek storm per read (measured 6x slower than a slim table, worse
-    # with more cores). One slim pass feeds every metadata check; only the
-    # audio invariant touches `bytes`. At cluster scale the same projection
-    # is a cheap shuffle-free stage whose output is a few % of table size.
-    meta_cols = ["part_id", "clip_id", "sr_hz", "dur_ms", "codec", "transcript"]
-    slim = clips.select(*[c for c in meta_cols if c in clips.columns]).persist()
-    persisted.append(slim)
-    slim.count()  # eager fill — see the violations note below
+    def get(name: str) -> DataFrame:
+        if name not in frames:
+            deps, build = _INPUTS[name]
+            frames[name] = build(given, cfg, *map(get, deps))
+            if name in shared:
+                frames[name] = frames[name].persist()
+                persisted.append(frames[name])
+        return frames[name]
 
-    # --- stats ---
-    st = stats.column_stats(
-        slim,
-        numeric_cols=list(cfg.numeric_cols),
-        other_cols=["clip_id", "codec", "transcript"],
-    ).persist()  # tiny (parts × cols); feeds several verdict branches
-    persisted.append(st)
-    # eager fill happens below, CONCURRENTLY with the violations fill
-    verdicts = stats.stats_verdicts(st, cfg.null_rate_max, cfg.range_bounds)
+    # shared inputs that read no other shared input (slim, the decode
+    # pass) fill first; the rest (stats) fill with the violation union,
+    # which reads only first-fill inputs
+    first = [n for n in shared if not set(_INPUTS[n][0]) & set(shared)]
+    _fill([get(n) for n in first])
+    last = [get(n) for n in shared if n not in first]
 
-    # per-partition row counts derived from stats — no extra scan of the fact
-    part_rows = st.where(F.col("column_name") == "clip_id").select(
-        "part_id", (F.col("count") + F.col("null_count")).alias("n_rows")
-    )
-
-    # --- violation-producing checks ---
-    violation_dfs: list[DataFrame] = [
-        uniqueness.uniqueness_violations(slim, n_salt=cfg.n_salt),
-    ]
-    check_names = ["uniqueness"]
-
-    if transcript_ref is not None:
-        violation_dfs.append(
-            referential.ref_integrity_violations(
-                slim, transcript_ref, strategy=cfg.ri_strategy
-            )
-        )
-        check_names.append("ref_integrity")
-
-    pv = pattern_violations(slim, CLIP_SPECS)
-    if pv is not None:
-        violation_dfs.append(pv)
-        check_names += [f"pattern:{s.name}" for s in CLIP_SPECS if s.pattern]
-
-    if cfg.check_speaking_rate:
-        from baskerville_spark.checks import consistency
-
-        lo, hi = cfg.speaking_rate_bounds
-        sr_v = consistency.speaking_rate_violations(slim, min_cps=lo, max_cps=hi)
-        violation_dfs.append(
-            sr_v.select(
-                "part_id",
-                "clip_id",
-                "check_name",
-                F.concat(
-                    F.lit("chars_per_sec="), F.col("chars_per_sec").cast("string")
-                ).alias("detail"),
-            )
-        )
-        check_names.append("speaking_rate")
-
-    inv = inv_mod.audio_invariant(clips, transcript_ref) if cfg.check_audio else None
-    if inv is not None and cfg.emit_audio_states:
-        # two consumers of the decode pass (violations + audio states):
-        # cache the narrow per-clip rows so audio is decoded exactly once.
-        # Eager fill happens below (subtree caches don't reliably populate
-        # under AQE), concurrently with the stats fill.
-        inv = inv.persist()
-        persisted.append(inv)
-    if cfg.check_audio:
-        violation_dfs.append(inv_mod.invariant_violations(inv))
-        check_names += ["snr", "decode_error", "transcript_eq"]
-
-    if cfg.check_payload_bytes:
-        from baskerville_spark.checks import consistency
-
-        if inv is not None:
-            # byte_len + echoed metadata ride out of the SAME Arrow pass that
-            # decodes audio (pc.binary_length on the batch offsets — no extra
-            # payload IO, and crucially NO clip_id join back to the metadata:
-            # clip_id is not unique, a join would cross-match dup rows)
-            meta_bl = inv
-        else:
-            # no decode pass to piggyback on: pay one dedicated payload scan
-            meta_bl = clips.select(
-                "part_id", "clip_id", "codec", "sr_hz", "dur_ms",
-                F.length("bytes").alias("byte_len"),
-            )
-        pb = consistency.payload_byte_violations(meta_bl)
-        violation_dfs.append(
-            pb.select(
-                "part_id",
-                "clip_id",
-                "check_name",
-                F.concat(
-                    F.lit("byte_len="), F.col("byte_len").cast("string"),
-                    F.lit(" expected="), F.col("expected_bytes").cast("string"),
-                ).alias("detail"),
-            )
-        )
-        check_names.append("payload_bytes")
-
-    violations = violation_dfs[0]
-    for v in violation_dfs[1:]:
-        violations = violations.unionByName(v)
-    # persist AND materialize eagerly: when the cached plan is first
-    # executed as a subtree of the much larger verdicts DAG, the cache
-    # does not reliably populate (observed under AQE) and every
-    # downstream action re-runs the full check scans including the audio
-    # decode. One explicit action here fills the cache; every verdict /
-    # caller action after it reads O(violations) rows only.
-    #
-    # The fills run CONCURRENTLY (guide §2.6 — independent jobs
-    # back-fill each other's task tails): stats and the decode-bearing
-    # frame share only the already-filled slim cache. When the audio
-    # states ride the decode pass, `inv` is the decode-bearing frame and
-    # the violations fill afterwards reads its cache (decode exactly
-    # once); otherwise violations itself carries the decode.
-    violations = violations.persist()
+    out: dict[str, list[DataFrame]] = defaultdict(list)
+    for c, r in zip(rows, reads):
+        out[c.sink].append(c.build(cfg, *map(get, r)))
+    violations = reduce(DataFrame.unionByName, out["violations"]).persist()
     persisted.append(violations)
-    from concurrent.futures import ThreadPoolExecutor
+    _fill(last + [violations])
 
-    first: list[DataFrame] = [st]
-    second: DataFrame | None = None
-    if inv is not None and cfg.emit_audio_states:
-        first.append(inv)
-        second = violations
-    else:
-        first.append(violations)
-    with ThreadPoolExecutor(max_workers=len(first)) as pool:
-        list(pool.map(lambda df: df.count(), first))
-    if second is not None:
-        second.count()
+    st = get("stats")
+    part_rows = st.where("column_name = 'clip_id'").selectExpr(
+        "part_id", "`count` + null_count AS n_rows"
+    )  # per-partition row counts from stats: no extra scan of the fact
+    names = [n for c in rows if c.sink == "violations" for n in c.owns]
+    out["verdicts"].append(_violation_verdicts(violations, part_rows, names))
 
-    verdicts = verdicts.unionByName(
-        _violation_verdicts(violations, part_rows, check_names)
-    )
-
-    # --- drift ---
-    if baseline_rows:
-        verdicts = verdicts.unionByName(
-            drift_mod.drift_verdicts(
-                slim, baseline_rows,
-                psi_threshold=cfg.psi_threshold, ks_threshold=cfg.ks_threshold,
-            )
-        )
-
-    # --- per-partition categorical-mix homogeneity (chi2 + Cramér's V) ---
-    if cfg.check_categorical_mix:
-        for c in cfg.categorical_cols:
-            mix = drift_mod.chi2_homogeneity(slim, "part_id", c)
-            verdicts = verdicts.unionByName(
-                mix.select(
-                    F.col("part_id").cast("int").alias("part_id"),
-                    F.lit(f"chi2:{c}").alias("check_name"),
-                    # single-partition tables (n_rest = 0) have no
-                    # complement to test against: undefined, not failed
-                    F.coalesce(
-                        F.col("cramers_v") <= F.lit(float(cfg.cramers_v_max)),
-                        F.lit(True),
-                    ).alias("passed"),
-                    F.col("cramers_v").cast("double").alias("metric_value"),
-                    F.lit(float(cfg.cramers_v_max)).alias("threshold"),
-                    F.col("n_group").cast("long").alias("n_rows"),
-                    F.lit(None).cast("long").alias("n_violations"),
-                )
-            )
-
-    # --- user-declared constraint suite (config-driven, e.g. JSON) ---
-    if cfg.extra_suite:
-        from baskerville_spark.checks import suite as suite_mod
-
-        sv = suite_mod.run_suite(
-            slim, list(cfg.extra_suite), group_by=["part_id"]
-        )
-        verdicts = verdicts.unionByName(
-            sv.select(
-                F.col("part_id").cast("int").alias("part_id"),
-                F.concat(F.lit("suite:"), F.col("check_name")).alias("check_name"),
-                "passed",
-                "metric_value",
-                "threshold",
-                "n_rows",
-                "n_violations",
-            )
-        )
-
-    # --- mergeable state rows (fed from the SAME persisted slim pass) ---
-    states_df = None
-    if cfg.emit_states:
-        from baskerville_spark.checks import stats_state as stats_state_mod
-
-        states_df = stats_state_mod.stats_state(
-            slim,
-            ["part_id"],
-            list(cfg.numeric_cols),
-            [c for c in cfg.state_distinct_cols if c in slim.columns],
-            hist_cols=dict(cfg.state_hist_edges) or None,
-        )
-
-    audio_states_df = None
-    if cfg.emit_audio_states:
-        from baskerville_spark.checks import audio_state as audio_state_mod
-
-        if inv is not None:
-            # the invariant decode pass already emits the per-clip state
-            # fields — aggregate those instead of paying a second decode
-            audio_states_df = audio_state_mod.state_from_per_clip(inv)
-        else:
-            audio_states_df = audio_state_mod.decode_state(clips)
+    def sink(name: str) -> DataFrame | None:
+        return reduce(DataFrame.unionByName, out[name]) if out[name] else None
 
     return ValidationResult(
-        verdicts=verdicts, violations=violations, stats=st,
-        states=states_df, audio_states=audio_states_df, persisted=persisted,
+        verdicts=sink("verdicts"), violations=violations, stats=st,
+        states=sink("states"), audio_states=sink("audio_states"),
+        persisted=persisted,
     )
 
 
@@ -517,15 +514,10 @@ def run_resumable(
     # its stale files. Deleting the pending partitions' sink subdirectories
     # first makes retry semantics replace-always, not replace-if-nonempty.
     # Driver-side metadata calls against the FS only — no data moves.
-    sinks = [
-        ("violations", observed),
-        ("stats", res.stats),
-        ("verdicts", res.verdicts),
+    sinks = [("violations", observed)] + [
+        (n, getattr(res, n)) for n in ("stats", "verdicts", "states", "audio_states")
+        if getattr(res, n) is not None
     ]
-    if res.states is not None:
-        sinks.append(("states", res.states))
-    if res.audio_states is not None:
-        sinks.append(("audio_states", res.audio_states))
     _delete_pending_sink_dirs(
         spark, out_dir, tuple(name for name, _ in sinks), pending
     )
@@ -562,8 +554,6 @@ def run_resumable(
             .collect()
         )
 
-    from concurrent.futures import ThreadPoolExecutor
-
     with ThreadPoolExecutor(max_workers=len(sinks) + 1) as pool:
         per_part_rows = pool.submit(_manifest_metrics)
         list(pool.map(_write, sinks))
@@ -596,10 +586,8 @@ def table_stats_from_states(
     O(partitions), not O(clips)). Exact for counts/nulls/min/max/integral
     sums and histogram bins; distinct comes back as the HLL union estimate
     (consume through a margin, see stats_state's module doc)."""
-    from baskerville_spark.checks import stats_state as stats_state_mod
-
     st = spark.read.parquet(f"{out_dir}/states")
-    distinct = [c for c in cfg.state_distinct_cols if f"{c}_hll" in st.columns]
+    distinct = [c for c in STATE_DISTINCT_COLS if f"{c}_hll" in st.columns]
     merged = stats_state_mod.merge_stats_states(
         st,
         [],

@@ -157,7 +157,7 @@ def test_audio_operators_edge_golden(spark):
             name, got[name]["rows"], want[name]["rows"])
 
 
-def _write_golden(outputs: dict) -> None:
+def _write_golden(outputs: dict, path: str = GOLDEN) -> None:
     """One line per row, so a semantic change reads as a one-line diff."""
     lines = ["{"]
     for i, name in enumerate(sorted(outputs)):
@@ -170,7 +170,7 @@ def _write_golden(outputs: dict) -> None:
                   for j, r in enumerate(rows)]
         lines.append(" ]}" + ("," if i < len(outputs) - 1 else ""))
     lines.append("}")
-    with open(GOLDEN, "w") as f:
+    with open(path, "w") as f:
         f.write("\n".join(lines) + "\n")
 
 

@@ -45,6 +45,34 @@ def test_cli_generate_baseline_validate(spark, tmp_path, capsys):
     assert json.loads(lines[-1])["partitions_processed"] == []
 
 
+def test_cli_validate_reads_clips_once(spark, tmp_path, capsys, monkeypatch):
+    """validate reports `rows` from the row counts the run committed to
+    the manifest: the clip table is read once, by the run itself."""
+    from pyspark.sql.readwriter import DataFrameReader
+
+    from baskerville_spark.generator import GenConfig, write_clips
+
+    clips = str(tmp_path / "clips")
+    write_clips(spark, clips, GenConfig(n_rows=120, n_parts=3))
+    reads = []
+    parquet = DataFrameReader.parquet
+
+    def recording(self, *paths, **kw):
+        reads.extend(paths)
+        return parquet(self, *paths, **kw)
+
+    monkeypatch.setattr(DataFrameReader, "parquet", recording)
+    assert main([
+        "validate", "--clips", clips, "--manifest", str(tmp_path / "manifest"),
+        "--out", str(tmp_path / "results"), "--skip-audio",
+    ]) == 0
+    lines = [l for l in capsys.readouterr().out.strip().splitlines() if l.startswith("{")]
+    report = json.loads(lines[-1])
+    assert report["partitions_processed"] == [0, 1, 2]
+    assert report["rows"] == 120
+    assert reads.count(clips) == 1
+
+
 def test_py_files_zip_importable(tmp_path):
     """The spark-submit --py-files contract end to end: scripts/package.sh
     must produce a zip whose root-level package dir resolves via zipimport —

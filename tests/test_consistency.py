@@ -217,6 +217,32 @@ def test_runner_consistency_checks_optin(spark, t1_clips, t1_tref):
     res0.unpersist()
 
 
+def test_payload_bytes_decodes_each_clip_once(spark, t1_clips, t1_cfg, monkeypatch):
+    """The invariant and the payload byte check both read the decode pass:
+    it is persisted and filled once, so the SNR kernel runs once per
+    decodable clip (the injected mp3 clips fail before the kernel)."""
+    from baskerville_spark.checks import invariants
+    from baskerville_spark.generator import expected_violation_indices
+    from baskerville_spark.runtime.runner import ValidationConfig, run_validation
+
+    calls = spark.sparkContext.accumulator(0)
+    kernel = invariants._snr_kernel
+
+    def counted(*args):
+        calls.add(1)
+        return kernel(*args)
+
+    monkeypatch.setattr(invariants, "_snr_kernel", counted)
+    res = run_validation(
+        spark, t1_clips, cfg=ValidationConfig(check_payload_bytes=True)
+    )
+    res.violations.collect()
+    res.verdicts.collect()
+    res.unpersist()
+    n_mp3 = len(expected_violation_indices(t1_cfg)["decode_error"])
+    assert calls.value == t1_cfg.n_rows - n_mp3
+
+
 def test_chunk_documents(spark):
     from baskerville_spark.functions.packing import chunk_documents
 
@@ -376,6 +402,11 @@ def test_out_of_order_stats_running_max(spark):
         ("u1", 5, "2024-01-01 11:00:00"),  # in order again
         ("u2", 1, "2024-01-01 00:00:00"),
         ("u2", 2, "2024-01-01 01:00:00"),
+        # u3: a NULL-sequence row sorts first but never counts late and
+        # never advances the running max (its 23:00 would make both later)
+        ("u3", None, "2024-01-01 23:00:00"),
+        ("u3", 1, "2024-01-01 00:00:00"),
+        ("u3", 2, "2024-01-01 01:00:00"),
     ]
     df = spark.createDataFrame(rows, "k string, seq int, ts_s string").select(
         "k", "seq", F.col("ts_s").cast("timestamp").alias("ts")
@@ -384,3 +415,4 @@ def test_out_of_order_stats_running_max(spark):
     assert (out["u1"]["n_events"], out["u1"]["n_late"]) == (5, 2)
     assert out["u1"]["late_frac"] == 0.4 and out["u1"]["flagged"]
     assert (out["u2"]["n_late"], out["u2"]["flagged"]) == (0, False)
+    assert (out["u3"]["n_events"], out["u3"]["n_late"]) == (3, 0)
