@@ -20,5 +20,3 @@ throughout the modules.
 """
 
 __version__ = "0.1.0"
-
-from baskerville_spark.session import get_session  # noqa: F401

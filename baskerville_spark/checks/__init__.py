@@ -7,26 +7,3 @@ contributes named agg expressions deduped by name into ONE
 funnel at src/baskerville/models/base_spark.py:445-458) — so the whole
 stats/verdict suite is a single shuffle over the fact table.
 """
-
-from baskerville_spark.checks.stats import column_stats  # noqa: F401
-from baskerville_spark.checks.uniqueness import duplicate_keys, uniqueness_violations  # noqa: F401
-from baskerville_spark.checks.referential import ref_integrity_violations  # noqa: F401
-from baskerville_spark.checks.drift import (  # noqa: F401
-    capture_baseline,
-    drift_verdicts,
-    psi_attribution,
-    wasserstein_binned,
-)
-from baskerville_spark.checks.consistency import partition_spill  # noqa: F401
-from baskerville_spark.checks.invariants import audio_invariant  # noqa: F401
-from baskerville_spark.checks.schema_check import ColumnSpec, enforce_schema  # noqa: F401
-from baskerville_spark.checks.suite import Constraint, run_suite  # noqa: F401
-from baskerville_spark.checks.snapshot import row_level_diff, snapshot_diff  # noqa: F401
-from baskerville_spark.checks.evolution import (  # noqa: F401
-    schema_evolution_df,
-    schema_evolution_report,
-)
-from baskerville_spark.checks.completeness import (  # noqa: F401
-    completeness_verdicts,
-    expected_from_snapshot,
-)

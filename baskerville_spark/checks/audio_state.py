@@ -98,13 +98,11 @@ def state_from_per_clip(
     )
 
 
-def merge_decode_states(
-    states: DataFrame, group_by: Sequence[str] = ("part_id",)
-) -> DataFrame:
-    """Fold decode-state rows by plain addition — exact for every field
-    (longs; sum_abs is decimal so the fold cannot overflow at table
-    scale)."""
-    out = states.groupBy(*group_by).agg(
+def merge_decode_states(states: DataFrame) -> DataFrame:
+    """Fold decode-state rows per ``part_id`` by plain addition — exact for
+    every field (longs; sum_abs is decimal so the fold cannot overflow at
+    table scale)."""
+    out = states.groupBy("part_id").agg(
         F.sum("n_clips").alias("n_clips"),
         F.sum("n_decoded").alias("n_decoded"),
         F.sum("n_failed").alias("n_failed"),

@@ -21,9 +21,9 @@ cannot belong to their clip — WITHOUT decoding anything:
 Scale: both are pure Column arithmetic over the metadata projection — no
 payload scan (the byte length rides in as a precomputed column: at cluster
 scale ``octet_length(bytes)`` is emitted by the same single pass that
-decodes audio, or read from parquet column statistics), one conditional-sum
-shuffle per check keyed on part_id, verdicts identical in shape to
-stats_verdicts so they union into the suite's verdict table.
+decodes audio, or read from parquet column statistics). Violation rows are
+a filter with no shuffle; speaking-rate verdicts are one conditional-sum
+shuffle keyed on part_id, identical in shape to stats_verdicts.
 """
 
 from __future__ import annotations
@@ -34,31 +34,6 @@ from pyspark.sql import functions as F
 #: bytes per sample for fixed-rate codecs; compressed codecs have no
 #: closed-form length and are skipped (non-checkable, not violations).
 FIXED_RATE_BPS = {"pcm_s16le": 2}
-
-
-def _flag_verdicts(
-    df: DataFrame, checkable: Column, violated: Column, check_name: str,
-    part_col: str = "part_id",
-) -> DataFrame:
-    """One conditional-sum agg -> per-partition verdict rows (VERDICT shape)."""
-    return (
-        df.groupBy(F.col(part_col).cast("int").alias("part_id"))
-        .agg(
-            F.sum(checkable.cast("long")).alias("n_rows"),
-            F.sum((checkable & violated).cast("long")).alias("n_violations"),
-        )
-        .select(
-            "part_id",
-            F.lit(check_name).alias("check_name"),
-            (F.col("n_violations") == 0).alias("passed"),
-            (F.col("n_violations") / F.greatest(F.col("n_rows"), F.lit(1)))
-            .cast("double")
-            .alias("metric_value"),
-            F.lit(0.0).alias("threshold"),
-            F.col("n_rows").cast("long").alias("n_rows"),
-            F.col("n_violations").cast("long").alias("n_violations"),
-        )
-    )
 
 
 def expected_payload_bytes(
@@ -72,111 +47,77 @@ def expected_payload_bytes(
     ).cast("bigint")
 
 
-def _payload_flags(
-    df: DataFrame,
-    byte_len_col: str,
-    codec_col: str,
-    sr_col: str,
-    dur_col: str,
-    bytes_per_sample: dict[str, int],
-) -> tuple[Column, Column, Column]:
-    """(checkable, violated, expected) column triple for the byte check."""
+def payload_byte_violations(df: DataFrame) -> DataFrame:
+    """Violation rows: (part_id, clip_id, check_name, byte_len, expected_bytes)
+    over the columns ``part_id, clip_id, byte_len, codec, sr_hz, dur_ms``."""
     expected = F.lit(None).cast("bigint")
-    for codec, bps in bytes_per_sample.items():
+    for codec, bps in FIXED_RATE_BPS.items():
         expected = F.when(
-            F.col(codec_col) == codec,
-            expected_payload_bytes(F.col(sr_col), F.col(dur_col), bps),
+            F.col("codec") == codec,
+            expected_payload_bytes(F.col("sr_hz"), F.col("dur_ms"), bps),
         ).otherwise(expected)
     checkable = (
         expected.isNotNull()
-        & F.col(sr_col).isNotNull()
-        & F.col(dur_col).isNotNull()
-        & F.col(byte_len_col).isNotNull()
+        & F.col("sr_hz").isNotNull()
+        & F.col("dur_ms").isNotNull()
+        & F.col("byte_len").isNotNull()
     )
-    violated = F.col(byte_len_col).cast("bigint") != expected
-    return checkable, violated, expected
-
-
-def payload_byte_verdicts(
-    df: DataFrame,
-    byte_len_col: str = "byte_len",
-    codec_col: str = "codec",
-    sr_col: str = "sr_hz",
-    dur_col: str = "dur_ms",
-    part_col: str = "part_id",
-    bytes_per_sample: dict[str, int] | None = None,
-) -> DataFrame:
-    """Per-partition payload-length consistency verdicts (fixed-rate codecs)."""
-    bps = bytes_per_sample or FIXED_RATE_BPS
-    checkable, violated, _ = _payload_flags(
-        df, byte_len_col, codec_col, sr_col, dur_col, bps
-    )
-    return _flag_verdicts(df, checkable, violated, "payload_bytes", part_col)
-
-
-def payload_byte_violations(
-    df: DataFrame,
-    id_col: str = "clip_id",
-    byte_len_col: str = "byte_len",
-    codec_col: str = "codec",
-    sr_col: str = "sr_hz",
-    dur_col: str = "dur_ms",
-    part_col: str = "part_id",
-    bytes_per_sample: dict[str, int] | None = None,
-) -> DataFrame:
-    """Violation rows: (part_id, clip_id, check_name, byte_len, expected_bytes)."""
-    bps = bytes_per_sample or FIXED_RATE_BPS
-    checkable, violated, expected = _payload_flags(
-        df, byte_len_col, codec_col, sr_col, dur_col, bps
-    )
+    violated = F.col("byte_len").cast("bigint") != expected
     return df.where(checkable & violated).select(
-        F.col(part_col).cast("int").alias("part_id"),
-        F.col(id_col).alias("clip_id"),
+        F.col("part_id").cast("int").alias("part_id"),
+        F.col("clip_id"),
         F.lit("payload_bytes").alias("check_name"),
-        F.col(byte_len_col).cast("bigint").alias("byte_len"),
+        F.col("byte_len").cast("bigint").alias("byte_len"),
         expected.alias("expected_bytes"),
     )
 
 
-def _rate_flags(
-    transcript_col: str, dur_col: str, min_cps: float, max_cps: float
-) -> tuple[Column, Column, Column]:
-    dur = F.col(dur_col).cast("double")
-    cps = F.length(F.col(transcript_col)) / (dur / F.lit(1000.0))
+def _rate_flags(min_cps: float, max_cps: float) -> tuple[Column, Column, Column]:
+    """(checkable, violated, chars_per_sec) over ``transcript`` and ``dur_ms``."""
+    dur = F.col("dur_ms").cast("double")
+    cps = F.length(F.col("transcript")) / (dur / F.lit(1000.0))
     checkable = (
-        F.col(transcript_col).isNotNull() & F.col(dur_col).isNotNull() & (dur > 0)
+        F.col("transcript").isNotNull() & F.col("dur_ms").isNotNull() & (dur > 0)
     )
     violated = (cps < F.lit(min_cps)) | (cps > F.lit(max_cps))
     return checkable, violated, cps
 
 
 def speaking_rate_verdicts(
-    df: DataFrame,
-    transcript_col: str = "transcript",
-    dur_col: str = "dur_ms",
-    part_col: str = "part_id",
-    min_cps: float = 0.5,
-    max_cps: float = 30.0,
+    df: DataFrame, min_cps: float = 0.5, max_cps: float = 30.0
 ) -> DataFrame:
-    """Per-partition speaking-rate plausibility verdicts."""
-    checkable, violated, _ = _rate_flags(transcript_col, dur_col, min_cps, max_cps)
-    return _flag_verdicts(df, checkable, violated, "speaking_rate", part_col)
+    """Per-partition speaking-rate plausibility verdicts (VERDICT shape) from
+    one conditional-sum aggregate over ``part_id, transcript, dur_ms``."""
+    checkable, violated, _ = _rate_flags(min_cps, max_cps)
+    return (
+        df.groupBy(F.col("part_id").cast("int").alias("part_id"))
+        .agg(
+            F.sum(checkable.cast("long")).alias("n_rows"),
+            F.sum((checkable & violated).cast("long")).alias("n_violations"),
+        )
+        .select(
+            "part_id",
+            F.lit("speaking_rate").alias("check_name"),
+            (F.col("n_violations") == 0).alias("passed"),
+            (F.col("n_violations") / F.greatest(F.col("n_rows"), F.lit(1)))
+            .cast("double")
+            .alias("metric_value"),
+            F.lit(0.0).alias("threshold"),
+            F.col("n_rows").cast("long").alias("n_rows"),
+            F.col("n_violations").cast("long").alias("n_violations"),
+        )
+    )
 
 
 def speaking_rate_violations(
-    df: DataFrame,
-    id_col: str = "clip_id",
-    transcript_col: str = "transcript",
-    dur_col: str = "dur_ms",
-    part_col: str = "part_id",
-    min_cps: float = 0.5,
-    max_cps: float = 30.0,
+    df: DataFrame, min_cps: float = 0.5, max_cps: float = 30.0
 ) -> DataFrame:
-    """Violation rows: (part_id, clip_id, check_name, chars_per_sec)."""
-    checkable, violated, cps = _rate_flags(transcript_col, dur_col, min_cps, max_cps)
+    """Violation rows: (part_id, clip_id, check_name, chars_per_sec) over
+    ``part_id, clip_id, transcript, dur_ms``."""
+    checkable, violated, cps = _rate_flags(min_cps, max_cps)
     return df.where(checkable & violated).select(
-        F.col(part_col).cast("int").alias("part_id"),
-        F.col(id_col).alias("clip_id"),
+        F.col("part_id").cast("int").alias("part_id"),
+        F.col("clip_id"),
         F.lit("speaking_rate").alias("check_name"),
         F.round(cps, 6).alias("chars_per_sec"),
     )

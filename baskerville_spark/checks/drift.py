@@ -20,7 +20,6 @@ is ONE groupBy(part_id) over the fact table per column group, all JVM-side
 
 from __future__ import annotations
 
-import math
 
 from pyspark.sql import Column, DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
@@ -30,6 +29,7 @@ from baskerville_spark.schema import BASELINE_SCHEMA
 EPS = 1e-4
 PSI_THRESHOLD = 0.2
 KS_THRESHOLD = 0.15
+CRAMERS_V_THRESHOLD = 0.2
 DEFAULT_BINS = 10
 
 
@@ -41,7 +41,6 @@ def capture_baseline(
     df: DataFrame,
     numeric_cols: list[str],
     categorical_cols: list[str],
-    n_bins: int = DEFAULT_BINS,
     max_categories: int = 32,
 ) -> list[Row]:
     """Snapshot baseline distributions from (presumed clean) data.
@@ -53,7 +52,7 @@ def capture_baseline(
     """
     rows: list[Row] = []
     if numeric_cols:
-        qs = [i / n_bins for i in range(n_bins + 1)]
+        qs = [i / DEFAULT_BINS for i in range(DEFAULT_BINS + 1)]
         aggs = []
         for c in numeric_cols:
             aggs.append(F.percentile_approx(F.col(c).cast("double"), qs).alias(f"{c}__q"))
@@ -228,11 +227,11 @@ def _bucket_for(c: str, baseline_row: Row):
 
 
 def _wide_bucket_agg(
-    df: DataFrame, baseline_rows: list[Row], part_col: str
+    df: DataFrame, baseline_rows: list[Row]
 ) -> tuple[DataFrame, dict[str, int]]:
     """The ONE-scan/ONE-shuffle wide aggregate shared by drift_verdicts and
     psi_attribution: every (column, bucket) conditional sum plus the
-    per-column non-null count, in a single groupBy(part).agg. The binning
+    per-column non-null count, in a single groupBy(part_id).agg. The binning
     here is parity-critical — the SQL oracles mirror it — so it must exist
     exactly once."""
     aggs = []
@@ -247,18 +246,16 @@ def _wide_bucket_agg(
             for i in range(n_buckets)
         ]
         aggs.append(F.count(F.col(c)).alias(f"{c}__n"))
-    wide = df.groupBy(F.col(part_col).cast("int").alias("part_id")).agg(*aggs)
+    wide = df.groupBy(F.col("part_id").cast("int").alias("part_id")).agg(*aggs)
     return wide, buckets
 
 
 def drift_verdicts(
     df: DataFrame,
     baseline_rows: list[Row],
-    part_col: str = "part_id",
-    psi_threshold: float = PSI_THRESHOLD,
-    ks_threshold: float = KS_THRESHOLD,
 ) -> DataFrame:
-    """Verdict rows (VERDICT_SCHEMA): psi:<col> and ks:<col> per partition.
+    """Verdict rows (VERDICT_SCHEMA): psi:<col> and ks:<col> per partition,
+    judged at ``PSI_THRESHOLD`` and ``KS_THRESHOLD``.
 
     ONE scan + ONE shuffle total: every column's per-bucket conditional sums
     are expressions in a single groupBy(part_id).agg(...); the PSI/KS math
@@ -269,7 +266,7 @@ def drift_verdicts(
     if not baseline_rows:
         raise ValueError("empty baseline")
 
-    wide, buckets = _wide_bucket_agg(df, baseline_rows, part_col)
+    wide, buckets = _wide_bucket_agg(df, baseline_rows)
 
     # ALL metric rows come out of ONE explode(array(struct...)) over the wide
     # aggregate — not a union of per-metric branches. A union looks harmless
@@ -289,8 +286,8 @@ def drift_verdicts(
         )
         psi, ks = _psi_ks_from_fracs(fracs, list(row["bin_fractions"]))
         for metric, expr, thr in (
-            ("psi", psi, psi_threshold),
-            ("ks", ks, ks_threshold),
+            ("psi", psi, PSI_THRESHOLD),
+            ("ks", ks, KS_THRESHOLD),
         ):
             structs.append(
                 F.struct(
@@ -305,15 +302,6 @@ def drift_verdicts(
     return wide.select(
         "part_id", F.explode(F.array(*structs)).alias("__v")
     ).select("part_id", "__v.*")
-
-
-def psi_py(p: list[float], q: list[float]) -> float:
-    """Driver-side PSI for tests/goldens."""
-    s = 0.0
-    for pi, qi in zip(p, q):
-        pi, qi = max(pi, EPS), max(qi, EPS)
-        s += (pi - qi) * math.log(pi / qi)
-    return s
 
 
 def rolling_bucket_aggs(value_col: str, bin_edges: list[float]) -> list[Column]:
@@ -394,7 +382,6 @@ def rolling_psi_verdicts(
     window_col: Column,
     value_col: str,
     bin_edges: list[float],
-    threshold: float = PSI_THRESHOLD,
 ) -> DataFrame:
     """Window-over-window drift: PSI of each time window's value
     distribution against the PREVIOUS consecutive window (w vs w-1) — the
@@ -402,10 +389,11 @@ def rolling_psi_verdicts(
     stream's own recent past (the reference's incident detector compares
     a runtime window to trailing stats the same way,
     incident_detector.py:240-289; this is that check generalized to a
-    whole distribution). Plan shape: see _rolling_pairs."""
+    whole distribution). Judged at ``PSI_THRESHOLD``. Plan shape: see
+    _rolling_pairs."""
     j, cur_fracs, prv_fracs = _rolling_pairs(df, window_col, value_col, bin_edges)
     return _rolling_select(
-        j, _clamped_psi(cur_fracs, prv_fracs), "psi", threshold
+        j, _clamped_psi(cur_fracs, prv_fracs), "psi", PSI_THRESHOLD
     )
 
 
@@ -414,13 +402,12 @@ def rolling_ks_verdicts(
     window_col: Column,
     value_col: str,
     bin_edges: list[float],
-    threshold: float = KS_THRESHOLD,
 ) -> DataFrame:
     """Window-over-window binned two-sample KS: max over bucket prefix sums
     of |CDF_w − CDF_{w−1}| — PSI's companion (PSI weights tail moves by
     log-ratio, KS catches bulk CDF shifts PSI's clamping mutes). Same
     single-aggregate + |windows|-row self-join plan as rolling PSI; no
-    EPS clamping (CDFs, not ratios)."""
+    EPS clamping (CDFs, not ratios). Judged at ``KS_THRESHOLD``."""
     j, cur_fracs, prv_fracs = _rolling_pairs(df, window_col, value_col, bin_edges)
     nb = len(list(bin_edges)) - 1
     diffs = [
@@ -428,7 +415,7 @@ def rolling_ks_verdicts(
         for i in range(1, nb + 1)
     ]
     ks = F.greatest(*diffs) if len(diffs) > 1 else diffs[0]
-    return _rolling_select(j, ks, "ks", threshold)
+    return _rolling_select(j, ks, "ks", KS_THRESHOLD)
 
 
 def rolling_chi2_verdicts(
@@ -436,7 +423,6 @@ def rolling_chi2_verdicts(
     window_col: Column,
     value_col: str,
     bin_edges: list[float],
-    threshold: float = 0.2,
 ) -> DataFrame:
     """Window-over-window chi-squared homogeneity on the shared bucket
     counts, judged on Cramér's V (sqrt(chi2/N) for the 2xK table — the
@@ -446,7 +432,8 @@ def rolling_chi2_verdicts(
     sizes). Cells empty in BOTH windows contribute exactly 0 (skipped —
     0/0 guards), mirroring chi2_homogeneity's zero-cell handling. Same
     single-aggregate + |windows|-row self-join plan as rolling PSI/KS;
-    no EPS clamping (counts, not ratios)."""
+    no EPS clamping (counts, not ratios). Judged at
+    ``CRAMERS_V_THRESHOLD``."""
     j, _, _ = _rolling_pairs(df, window_col, value_col, bin_edges)
     nb = len(list(bin_edges)) - 1
     n_tot = (F.col("cur_n") + F.col("prv_n")).cast("double")
@@ -463,7 +450,7 @@ def rolling_chi2_verdicts(
     v = F.when(
         (F.col("cur_n") > 0) & (F.col("prv_n") > 0), F.sqrt(chi2 / n_tot)
     )
-    return _rolling_select(j, v, "cramers_v", threshold)
+    return _rolling_select(j, v, "cramers_v", CRAMERS_V_THRESHOLD)
 
 
 # --------------------------------------------------------------------------
@@ -473,7 +460,6 @@ def rolling_chi2_verdicts(
 def psi_attribution(
     df: DataFrame,
     baseline_rows: list[Row],
-    part_col: str = "part_id",
     top_k: int | None = None,
 ) -> DataFrame:
     """Per-bin PSI contribution rows — the explanation attached to a
@@ -503,7 +489,7 @@ def psi_attribution(
     if not baseline_rows:
         raise ValueError("empty baseline")
 
-    wide, buckets = _wide_bucket_agg(df, baseline_rows, part_col)
+    wide, buckets = _wide_bucket_agg(df, baseline_rows)
 
     structs = []
     for row in baseline_rows:

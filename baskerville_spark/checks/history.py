@@ -5,10 +5,9 @@ current value exceeds the trailing mean + sigma*stddev over a lookback
 window per target (src/baskerville/models/incident_detector.py:251-295 —
 the baseline SQL at 264-275 computes AVG/STDDEV over the trailing window).
 This module restates that discipline over the VALIDATION ENGINE'S OWN
-metrics: every run appends narrow
-``(run_id, part_id, column_name, metric_name, metric_value)`` rows — melted
-from ``column_stats`` output by :func:`metric_history_rows` — to a history
-table, and :func:`detect_metric_anomalies` flags any run whose metric
+metrics: over a history table of narrow
+``(run_id, part_id, column_name, metric_name, metric_value)`` rows,
+:func:`detect_metric_anomalies` flags any run whose metric
 deviates from its own trailing history by a k-sigma band or a
 relative-change bound.  This is the metrics-repository + anomaly-detection
 architecture Deequ popularized (repository of per-run analyzer metrics,
@@ -34,50 +33,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-#: metrics melted out of a ``column_stats`` row, all cast to double so the
-#: history table has ONE value column regardless of the source metric type.
-HISTORY_METRICS = ("count", "null_rate", "approx_distinct", "min", "max")
-
 STDDEV_FLOOR = 1e-9
-
-
-def metric_history_rows(stats: DataFrame, run_id: int) -> DataFrame:
-    """Melt ``column_stats`` long-format output into narrow history rows.
-
-    Input: the ``column_stats`` frame (part_id, column_name, count,
-    null_count, min, max, approx_distinct, quantiles).  Output: one row per
-    (part_id, column_name, metric) with columns
-    ``run_id, part_id, column_name, metric_name, metric_value`` — null_rate
-    is derived as ``null_count / (count + null_count)`` (0 on empty), min /
-    max rows are emitted only for numeric source columns (they are NULL in
-    the stats frame otherwise and NULL history rows are dropped: a metric
-    that does not exist is not a zero).  Pure projection + explode — no new
-    shuffle beyond the one ``column_stats`` already paid.
-    """
-    total = F.col("count") + F.col("null_count")
-    null_rate = F.when(total > 0, F.col("null_count") / total).otherwise(F.lit(0.0))
-    metrics = F.array(
-        F.struct(F.lit("count").alias("metric_name"),
-                 F.col("count").cast("double").alias("metric_value")),
-        F.struct(F.lit("null_rate").alias("metric_name"),
-                 null_rate.cast("double").alias("metric_value")),
-        F.struct(F.lit("approx_distinct").alias("metric_name"),
-                 F.col("approx_distinct").cast("double").alias("metric_value")),
-        F.struct(F.lit("min").alias("metric_name"),
-                 F.col("min").cast("double").alias("metric_value")),
-        F.struct(F.lit("max").alias("metric_name"),
-                 F.col("max").cast("double").alias("metric_value")),
-    )
-    return (
-        stats.select(
-            F.lit(int(run_id)).cast("long").alias("run_id"),
-            "part_id",
-            "column_name",
-            F.explode(metrics).alias("m"),
-        )
-        .select("run_id", "part_id", "column_name", "m.metric_name", "m.metric_value")
-        .where(F.col("metric_value").isNotNull())
-    )
 
 
 def detect_metric_anomalies(

@@ -74,19 +74,17 @@ def _snr_kernel(pcm: np.ndarray, clip_id: str, sr_hz: int | None) -> tuple:
 def audio_invariant(
     clips: DataFrame,
     transcript_ref: DataFrame | None = None,
-    broadcast_dim: bool = True,
 ) -> DataFrame:
     """Evaluate the decode + transcript invariant; returns INVARIANT_RESULT rows.
 
     transcript_ok is null when the clip has no reference transcript (that
-    case is the referential-integrity check's job, not this one's).
+    case is the referential-integrity check's job, not this one's). The
+    transcript dimension is broadcast into the join.
     """
     cols = ["part_id", "clip_id", "bytes", "sr_hz", "dur_ms", "codec", "transcript"]
     df = clips.select(*cols)
     if transcript_ref is not None:
-        dim = transcript_ref.select("clip_id", "transcript_ref")
-        if broadcast_dim:
-            dim = F.broadcast(dim)
+        dim = F.broadcast(transcript_ref.select("clip_id", "transcript_ref"))
         df = df.join(dim, on="clip_id", how="left")
         transcript_ok = (
             "IF(transcript_ref IS NULL, NULL, transcript <=> transcript_ref)"

@@ -92,7 +92,6 @@ def row_level_diff(
     b: DataFrame,
     part_col: str,
     key_cols: list[str],
-    hash_cols: list[str] | None = None,
     changed_parts: list | None = None,
 ) -> DataFrame:
     """Row-level drill-down inside partitions snapshot_diff already marked
@@ -120,8 +119,7 @@ def row_level_diff(
     re-scores whole runtime windows (src/baskerville/models/engine.py)
     and never asks what changed.
     """
-    if hash_cols is None:
-        hash_cols = [c for c in a.columns if c != part_col and c not in key_cols]
+    hash_cols = [c for c in a.columns if c != part_col and c not in key_cols]
     if not hash_cols:
         raise ValueError(
             "row_level_diff needs at least one payload column to hash; "

@@ -53,7 +53,7 @@ def _stat(col: str, stat: str) -> str:
 
 
 def _aggs_for(
-    df: DataFrame, col: str, numeric: bool, quantiles: list[float], lg_k: int
+    df: DataFrame, col: str, numeric: bool, lg_k: int
 ) -> list[str]:
     """One column's aggregates as SQL text (see ``sqltext``: the JVM parses
     each in one call, where the Column-algebra form cost ~40 py4j round
@@ -67,7 +67,7 @@ def _aggs_for(
         f" AS {out('approx_distinct')}",
     ]
     if numeric:
-        qs = ", ".join(sqltext.lit(float(q)) for q in quantiles)
+        qs = ", ".join(sqltext.lit(float(q)) for q in DEFAULT_QUANTILES)
         aggs += [
             f"CAST(min({c}) AS DOUBLE) AS {out('min')}",
             f"CAST(max({c}) AS DOUBLE) AS {out('max')}",
@@ -82,16 +82,15 @@ def column_stats(
     part_col: str | None = "part_id",
     numeric_cols: list[str] | None = None,
     other_cols: list[str] | None = None,
-    quantiles: list[float] | None = None,
     rsd: float = 0.02,
 ) -> DataFrame:
     """Long-format per-(partition, column) stats: one shuffle total.
 
     Returns columns: part_id, column_name, count, null_count, min, max,
-    approx_distinct, quantiles (array<double>, numeric cols only).
-    ``part_col=None`` computes whole-table stats (part_id = 0).
+    approx_distinct, quantiles (array<double> at ``DEFAULT_QUANTILES``,
+    numeric cols only). ``part_col=None`` computes whole-table stats
+    (part_id = 0).
     """
-    quantiles = quantiles or DEFAULT_QUANTILES
     if part_col is None:
         df = df.withColumn("__whole_table", F.lit(0))
         part_col = "__whole_table"
@@ -109,9 +108,9 @@ def column_stats(
     lg_k = lg_k_for_rsd(rsd)
     aggs: list[str] = []
     for c in numeric_cols:
-        aggs += _aggs_for(df, c, True, quantiles, lg_k)
+        aggs += _aggs_for(df, c, True, lg_k)
     for c in other_cols:
-        aggs += _aggs_for(df, c, False, quantiles, lg_k)
+        aggs += _aggs_for(df, c, False, lg_k)
 
     wide = df.groupBy(F.col(part_col).alias("part_id")).agg(*map(F.expr, aggs))
 

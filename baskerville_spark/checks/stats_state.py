@@ -159,19 +159,16 @@ def merge_stats_states(
 def finalize_stats(
     state: DataFrame,
     distinct_cols: Sequence[str] = (),
-    drop_sketches: bool = True,
 ) -> DataFrame:
     """Render consumable stats from a state row: adds
     ``{c}_distinct_est`` (long) per distinct col and drops the binary
-    sketches (keep them with ``drop_sketches=False`` to continue merging)."""
+    sketches (merge the state rows, not this output)."""
     out = state
     for c in distinct_cols:
         out = out.withColumn(
             f"{c}_distinct_est", F.hll_sketch_estimate(f"{c}_hll")
         )
-    if drop_sketches:
-        out = out.drop(*[f"{c}_hll" for c in distinct_cols])
-    return out
+    return out.drop(*[f"{c}_hll" for c in distinct_cols])
 
 
 # --------------------------------------------------------------------------

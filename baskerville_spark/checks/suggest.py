@@ -44,11 +44,11 @@ from __future__ import annotations
 
 from typing import Optional, Sequence
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-__all__ = ["suggest_constraints", "suggested_suite", "functional_dependency"]
+__all__ = ["suggest_constraints", "functional_dependency"]
 
 _NUMERIC = (T.LongType, T.IntegerType, T.ShortType, T.ByteType,
             T.DoubleType, T.FloatType, T.DecimalType)
@@ -153,36 +153,6 @@ def suggest_constraints(
     out.sort(key=lambda r: (r[0], r[1]))
     spark = df.sparkSession
     return spark.createDataFrame(out, _SUGGEST_SCHEMA)
-
-
-def suggested_suite(df: DataFrame, **kwargs) -> list:
-    """Bridge suggestions to runnable checks/suite.py Constraints.
-
-    By construction every returned constraint PASSES on the profiled table
-    (the Deequ round-trip property — asserted in tests/test_checks.py):
-    bounds/membership are the observed envelope, completeness thresholds
-    have ``pad`` headroom, unique re-checks via an exact-count predicate
-    pair (approx_distinct is NOT used, so the round-trip is deterministic).
-    """
-    from baskerville_spark.checks import suite as S
-
-    cons: list = []
-    for r in suggest_constraints(df, **kwargs).collect():
-        name = f"{r['col_name']}_{r['kind']}"
-        if r["kind"] == "completeness":
-            cons.append(S.completeness(name, r["col_name"], r["threshold"]))
-        elif r["kind"] == "bounds":
-            cons.append(S.bounds(name, r["col_name"], r["lo"], r["hi"]))
-        elif r["kind"] == "membership":
-            cons.append(S.membership(name, r["col_name"],
-                                     r["members"].split(",")))
-        # 'unique' has no single-pass suite kind (it is a grouped property);
-        # callers get it from checks/uniqueness.py — deliberately skipped.
-    return cons
-
-
-_FD_SCHEMA_COLS = ("fd_name", "n_groups", "n_violating",
-                   "violation_rate", "passed")
 
 
 def functional_dependency(

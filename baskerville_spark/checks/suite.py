@@ -52,7 +52,6 @@ __all__ = [
     "mean_between",
     "approx_distinct_min",
     "run_suite",
-    "suite_to_json",
     "suite_from_json",
 ]
 
@@ -224,30 +223,6 @@ _KINDS = (
     "completeness", "bounds", "pattern", "membership", "predicate",
     "mean", "approx_distinct",
 )
-
-
-def suite_to_json(cons: Sequence[Constraint]) -> str:
-    """Serialize a constraint list to a versioned JSON document."""
-    import json
-
-    return json.dumps(
-        {
-            "format": _SUITE_FORMAT,
-            "constraints": [
-                {
-                    "name": c.name,
-                    "kind": c.kind,
-                    "column": c.column,
-                    "threshold": c.threshold,
-                    "params": [
-                        list(p) if isinstance(p, tuple) else p for p in c.params
-                    ],
-                }
-                for c in cons
-            ],
-        },
-        indent=2,
-    )
 
 
 def suite_from_json(doc: str) -> list[Constraint]:

@@ -21,13 +21,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from baskerville_spark.checks import sqltext
-
 
 def duplicate_keys(
     df: DataFrame,
     key: str = "clip_id",
-    part_col: str = "part_id",
     n_salt: int = 64,
     scope_per_partition: bool = True,
 ) -> DataFrame:
@@ -39,7 +36,7 @@ def duplicate_keys(
     pessimization. ``scope_per_partition=True`` checks uniqueness within
     each table partition (the per-partition verdict unit); False globally.
     """
-    group_final = [part_col, key] if scope_per_partition else [key]
+    group_final = ["part_id", key] if scope_per_partition else [key]
     return (
         df.select(*group_final)
         .groupBy(*group_final)
@@ -52,7 +49,6 @@ def duplicate_exemplars(
     df: DataFrame,
     key: str = "clip_id",
     id_col: str = "clip_id",
-    part_col: str | None = None,
     k: int = 8,
     n_salt: int = 64,
     hot_threshold: int = 200_000,
@@ -114,8 +110,8 @@ def duplicate_exemplars(
             "duplicate_exemplars decides its physical form from an eager "
             "pre-count and cannot run on a streaming DataFrame"
         )
-    group_final = [part_col, key] if part_col else [key]
-    slim = df.select(*group_final, F.col(id_col).alias("__id"))
+    group_final = [key]
+    slim = df.select(key, F.col(id_col).alias("__id"))
     # ONE materialized pre-aggregate (map-side combined, narrow key+count
     # rows — far smaller than the table) buys BOTH the plan decision and,
     # on the hot path, the dup-key filter: the r05 review found the first
@@ -194,29 +190,14 @@ def duplicate_exemplars(
     )
 
 
-def uniqueness_violations(
-    df: DataFrame,
-    key: str = "clip_id",
-    part_col: str = "part_id",
-    n_salt: int = 64,
-) -> DataFrame:
-    """Violation rows (VIOLATION_SCHEMA shape) for duplicated clip_ids."""
-    dups = duplicate_keys(df, key, part_col, n_salt)
+def uniqueness_violations(df: DataFrame, n_salt: int = 64) -> DataFrame:
+    """Violation rows (VIOLATION_SCHEMA shape) for clip_ids duplicated
+    within a ``part_id``."""
+    dups = duplicate_keys(df, n_salt=n_salt)
     # SQL text: one py4j call where Column algebra took dozens (checks/sqltext)
     return dups.selectExpr(
-        f"CAST({sqltext.ident(part_col)} AS INT) AS part_id",
-        f"{sqltext.ident(key)} AS clip_id",
+        "CAST(part_id AS INT) AS part_id",
+        "clip_id",
         "'uniqueness' AS check_name",
         "concat('dup_count=', CAST(dup_count AS STRING)) AS detail",
-    )
-
-
-def naive_duplicate_keys(
-    df: DataFrame, key: str = "clip_id", part_col: str = "part_id"
-) -> DataFrame:
-    """Unsalted oracle for the property test (small data only)."""
-    return (
-        df.groupBy(part_col, key)
-        .agg(F.count(F.lit(1)).alias("dup_count"))
-        .where(F.col("dup_count") > 1)
     )

@@ -5,78 +5,3 @@ These extend the validation engine with the operations a 100 TB
 training-data pipeline needs. All hot paths are JVM-side Column algebra;
 Python appears only in Arrow-batched pandas UDFs (multimodal decode).
 """
-
-from baskerville_spark.functions.dedup import (  # noqa: F401
-    decontaminate,
-    dedup_lines,
-    exact_duplicates,
-    minhash_signatures,
-    minhash_lsh_pairs,
-    ngram_jaccard_pairs,
-    shingle_containment_pairs,
-    simhash,
-    tfidf_cosine_pairs,
-)
-from baskerville_spark.functions.packing import (  # noqa: F401
-    pack_sequences,
-    packed_bin_summary,
-)
-from baskerville_spark.functions.text import (  # noqa: F401
-    char_entropy,
-    fingerprint,
-    lang_id,
-    pii_scrub,
-    quality_features,
-    repetition_metrics,
-)
-from baskerville_spark.functions.similarity import (  # noqa: F401
-    cosine_topk,
-    hyperplane_lsh_pairs,
-)
-from baskerville_spark.functions.graph import (  # noqa: F401
-    connected_components,
-    connected_components_bigstar,
-    dedup_clusters,
-    prior_label_membership,
-    star_edges,
-)
-from baskerville_spark.functions.graph import (  # noqa: F401
-    incremental_membership,
-)
-from baskerville_spark.functions.audio_quality import (  # noqa: F401
-    audio_bandwidth,
-    audio_downmix,
-    audio_loudness_stats,
-    audio_normalize,
-    audio_overlay,
-    audio_pitch_period,
-    audio_resample,
-    audio_segment,
-    audio_spectral_features,
-    audio_trim_silence,
-    audio_vad_stats,
-)
-from baskerville_spark.functions.audio_dedup import (  # noqa: F401
-    audio_align_offsets,
-    audio_content_fingerprints,
-    conflicting_label_groups,
-    content_duplicate_pairs,
-)
-from baskerville_spark.functions.timegrid import (  # noqa: F401
-    gap_fill,
-)
-from baskerville_spark.functions.bloom import (  # noqa: F401
-    bloom_semi_join,
-    build_bloom_bitmap,
-)
-from baskerville_spark.functions.layout import (  # noqa: F401
-    file_skip_plan,
-    plan_compaction,
-    z_value,
-)
-from baskerville_spark.functions.dedup import (  # noqa: F401
-    keep_canonical,
-)
-from baskerville_spark.functions.sampling import (  # noqa: F401
-    train_val_test_split,
-)

@@ -134,33 +134,6 @@ def exact_duplicates(
     )
 
 
-def exact_duplicates_window(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    exemplar_k: int = 16,
-) -> DataFrame:
-    """Window-form alternative to ``exact_duplicates`` (same output): a
-    row_number over (hash, id) whose external sort SPILLS a hot key instead
-    of OOMing — but runs it on ONE task. Kept as the comparison baseline for
-    the property test; the salted two-phase form is the scale default.
-    """
-    hashed = df.select(F.md5(F.col(text_col)).alias("text_hash"), F.col(id_col).alias("id"))
-    counts = (
-        hashed.groupBy("text_hash")
-        .agg(F.count(F.lit(1)).alias("dup_count"))
-        .where(F.col("dup_count") > 1)
-    )
-    w = Window.partitionBy("text_hash").orderBy("id")
-    exemplars = (
-        hashed.withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") <= exemplar_k)
-        .groupBy("text_hash")
-        .agg(F.sort_array(F.collect_list("id")).alias("ids"))
-    )
-    return counts.join(exemplars, "text_hash").select("text_hash", "dup_count", "ids")
-
-
 def _jaccard_pairs_over(sh: DataFrame, threshold: float, candidates: DataFrame | None) -> DataFrame:
     """Pair Jaccard from a (id, shingle) table; sizes and intersections use
     the SAME shingle set so the metric is internally consistent.

@@ -1,112 +1,11 @@
-"""Native-expression replacements for the reference's per-row web-log UDFs
-(SURVEY.md §2.9) — every one of these was a row-at-a-time Python UDF in the
-reference; here they are pure Column algebra (codegen, pushdown-friendly).
-
-| reference UDF | file:line | here |
-|---|---|---|
-| udf_remove_www (strip www./port, lowercase) | spark/udfs.py:21-26 | remove_www |
-| udf_normalize_host_name (longest dot-token) | spark/udfs.py:29-38 | normalize_host |
-| filter_prefixes / filter_stars (URL wildcard) | tasks.py:700-717 | url_matches_any |
-| challenge_decision (anomalies >= t*(a+n)) | base_spark.py:486-504 | challenge_decision |
-| status-class floor(code/100) | feature_response4xx_total.py:27-31 | status_class |
-| path depth size(split(url,'/'))-1 | feature_path_depth_average.py:31-35 | path_depth |
-"""
+"""Web-log attack verdicts as Column algebra: the reference's low-rate-attack
+predicate and its Challenge task's command flow (SURVEY.md §2.9), which the
+reference ran row at a time on the driver."""
 
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-
-
-def remove_www(host: Column) -> Column:
-    """Lowercase, strip a leading 'www.' and any ':port' suffix."""
-    h = F.lower(host)
-    h = F.regexp_replace(h, r"^www\.", "")
-    return F.regexp_replace(h, r":\d+$", "")
-
-
-def normalize_host(host: Column) -> Column:
-    """Longest dot-separated token of the cleaned host (the reference's
-    heuristic site name: udfs.py:29-38), via array_max over (len, token)."""
-    toks = F.split(remove_www(host), r"\.")
-    best = F.array_max(
-        F.transform(toks, lambda t: F.struct(F.length(t).alias("l"), t.alias("t")))
-    )
-    return best["t"]
-
-
-def url_matches_any(url: Column, patterns: list[str]) -> Column:
-    """URL whitelist: exact match, 'prefix*' wildcard, or '*suffix' wildcard —
-    the reference's filter_prefixes/filter_stars UDF pair as startswith/endswith."""
-    cond = F.lit(False)
-    for p in patterns:
-        if p.endswith("*") and p.startswith("*"):
-            cond = cond | url.contains(F.lit(p[1:-1]))
-        elif p.endswith("*"):
-            cond = cond | url.startswith(F.lit(p[:-1]))
-        elif p.startswith("*"):
-            cond = cond | url.endswith(F.lit(p[1:]))
-        else:
-            cond = cond | (url == F.lit(p))
-    return cond
-
-
-def status_class(code: Column) -> Column:
-    """HTTP status class: floor(code/100) (feature_response4xx_total.py:27-31)."""
-    return F.floor(code.cast("int") / 100).cast("int")
-
-
-def path_depth(url: Column) -> Column:
-    """Slash depth of a URL path (feature_path_depth_average.py:31-35)."""
-    return (F.size(F.split(url, "/")) - 1).cast("int")
-
-
-def multiply_traffic(
-    df: DataFrame,
-    factor: int,
-    ip_col: str = "client_ip",
-    seed: int = 42,
-) -> DataFrame:
-    """Load-test traffic multiplication (reference spark/helpers.py:220-239
-    semantics: ``factor`` copies of the batch, clone IPs rewritten so per-IP
-    grouping fans out realistically; copy 0 is the original traffic).
-
-    Implemented as ONE scan + ``explode(sequence(0, factor-1))`` — the
-    reference's union-of-copies shape scans the source ``factor`` times
-    (uncached) and builds a ``factor``-branch plan. Clone IPs derive from
-    ``xxhash64(ip, copy, seed)`` octets: deterministic (same seed → same
-    traffic, unlike per-task rand under retries) and still per-(ip, copy)
-    distinct. Pure column ops — the multiplied stream is never driver-side."""
-    if factor < 1:
-        raise ValueError("factor must be >= 1")
-    out = df.select(
-        "*",
-        F.explode(F.sequence(F.lit(0), F.lit(factor - 1))).alias("load_test_copy"),
-    )
-
-    def _octet(salt: int, span: int, base: int) -> Column:
-        h = F.xxhash64(F.col(ip_col), F.col("load_test_copy"), F.lit(seed + salt))
-        return (F.pmod(h, F.lit(span)) + base).cast("int")
-
-    fake_ip = F.concat_ws(
-        ".",
-        _octet(0, 253, 1),
-        _octet(1, 255, 0),
-        _octet(2, 255, 0),
-        _octet(3, 253, 1),
-    )
-    return out.withColumn(
-        ip_col,
-        F.when(F.col("load_test_copy") == 0, F.col(ip_col)).otherwise(fake_ip),
-    )
-
-
-def challenge_decision(n_anomalous: Column, n_normal: Column, threshold: float) -> Column:
-    """Per-host challenge vote: anomalies >= threshold * total
-    (base_spark.py:486-504) — the verdict-thresholding shape reused by our
-    partition pass/fail."""
-    total = n_anomalous + n_normal
-    return (total > 0) & (n_anomalous >= F.lit(threshold) * total)
 
 
 def low_rate_attack(

@@ -1,13 +1,3 @@
-from baskerville_spark.ml.iforest import (  # noqa: F401
-    IsolationForest,
-    score_anomalies,
-    top_anomalies,
-    train_iforest,
-)
-from baskerville_spark.ml.gbm import (  # noqa: F401
-    GBMClassifier,
-    predict_label,
-    predict_proba,
-    train_gbm,
-)
-from baskerville_spark.ml.registry import ModelStore  # noqa: F401
+"""Anomaly and classification models: a deterministic isolation forest and
+gradient-boosted stumps, trained on a bounded driver sample and scored in
+Arrow batches."""

@@ -224,54 +224,3 @@ def top_anomalies(
     same primitive plus an approx-quantile pass."""
     scored = score_anomalies(df, forest, id_col, feature_cols)
     return scored.orderBy(F.desc("anomaly_score"), F.asc("id")).limit(k)
-
-
-def flag_anomalies(
-    df: DataFrame,
-    forest: IsolationForest,
-    id_col: str,
-    feature_cols: list[str],
-    contamination: float = 0.1,
-    part_col: str | None = None,
-) -> DataFrame:
-    """Violation rows for the most-anomalous ``contamination`` fraction —
-    the reference's transform semantics (anomaly_model.py:199-209:
-    threshold = approxQuantile(1 - contamination) on anomalyScore, flag
-    above it). The quantile is ONE sketch aggregate over the scored rows
-    (no sort); the verdict filter is a scalar comparison. Output matches
-    the engine's violation-row shape (part_id, clip_id, check_name,
-    detail) so it composes with the runner's sinks."""
-    base = df.select(
-        *([F.col(part_col)] if part_col else []),
-        F.col(id_col),
-        *[F.col(c) for c in feature_cols],
-    )
-    scored = score_anomalies(base, forest, id_col, feature_cols)
-    if part_col:
-        scored = scored.join(
-            base.select(F.col(id_col).alias("id"), F.col(part_col)), "id"
-        )
-    # persist: the quantile agg below and the caller's action on the
-    # returned frame would otherwise each run the forest-scoring UDF over
-    # the full input — the single most expensive stage, twice. Narrow rows
-    # only (id, score, part); payload columns were projected away in base.
-    scored = scored.persist()
-    thr_row = scored.agg(
-        F.percentile_approx("anomaly_score", 1.0 - contamination).alias("t")
-    ).collect()[0]
-    thr = float(thr_row["t"]) if thr_row["t"] is not None else float("inf")
-    out = scored.where(F.col("anomaly_score") > thr).select(
-        (F.col(part_col).cast("int") if part_col else F.lit(0)).alias("part_id"),
-        F.col("id").cast("string").alias("clip_id"),
-        F.lit("anomaly").alias("check_name"),
-        F.concat(F.lit("score="), F.round("anomaly_score", 4).cast("string")).alias(
-            "detail"
-        ),
-    ).persist()
-    # materialize the (tiny) violation rows, then drop the full scored
-    # cache — a long-running driver calling this per batch must not
-    # accumulate one scored dataset per call (round-4 review catch).
-    # The returned frame stays cached; it is the caller's to unpersist.
-    out.count()
-    scored.unpersist()
-    return out

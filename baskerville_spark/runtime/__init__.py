@@ -1,11 +1,2 @@
-from baskerville_spark.runtime.manifest import (  # noqa: F401
-    commit_partition,
-    done_partitions,
-    read_manifest,
-)
-from baskerville_spark.runtime.runner import (  # noqa: F401
-    ValidationConfig,
-    ValidationResult,
-    run_validation,
-    run_resumable,
-)
+"""Resumable validation runtime: the check runner, the partition manifest,
+state stores and metrics."""

@@ -601,8 +601,6 @@ def table_stats_from_states(
 def route_quarantine(
     clips: DataFrame,
     violations: DataFrame,
-    key: str = "clip_id",
-    part_col: str = "part_id",
 ) -> tuple[DataFrame, DataFrame]:
     """Split the input into (clean, quarantine) around the violations
     table — the routing step that keeps bad rows out of a training corpus
@@ -613,8 +611,8 @@ def route_quarantine(
 
     quarantine carries ``reasons`` = the sorted set of violated check
     names per key (bounded by the check count — collect_set can't blow
-    up). Joins are on (part, key): violations are per-partition facts, and
-    keys are only guaranteed unique within a partition. The reasons side
+    up). Joins are on (part_id, clip_id): violations are per-partition
+    facts, and keys are only guaranteed unique within a partition. The reasons side
     is O(violating keys) — usually tiny (AQE broadcasts it), but a
     pathological table can have violations on most rows, so no broadcast
     is FORCED; the joins degrade to co-partitioned sort-merge. clean ∪
@@ -622,11 +620,10 @@ def route_quarantine(
     listed is quarantined — including ALL physical copies of a duplicated
     key.
     """
-    reasons = violations.groupBy(part_col, key).agg(
+    keys = ["part_id", "clip_id"]
+    reasons = violations.groupBy(*keys).agg(
         F.sort_array(F.collect_set("check_name")).alias("reasons")
     )
-    quarantine = clips.join(reasons, [part_col, key], "inner")
-    clean = clips.join(
-        reasons.select(part_col, key), [part_col, key], "left_anti"
-    )
+    quarantine = clips.join(reasons, keys, "inner")
+    clean = clips.join(reasons.select(*keys), keys, "left_anti")
     return clean, quarantine

@@ -12,8 +12,8 @@ Here the stash is a :class:`~baskerville_spark.runtime.state.StateStore`
 (the same versioned-parquet + atomic-pointer store the feature cache
 uses; Redis's ``ttl`` option maps to ``expire_state`` on read, its
 ``key.column`` to ``keys``). On a cluster the stash write is one line —
-``sources/sinks.save_features(fmt='redis')`` or the kafka_shaped sink —
-with identical split/merge semantics.
+the kafka_shaped sink or a Redis writer — with identical split/merge
+semantics.
 
 Scale: the merge is an equi-join on the uuid keys; the sensitive side is
 bounded by TTL x ingest rate, the prediction side by the batch — both

@@ -4,8 +4,6 @@ rebuilt as a declarative upsert + TTL expiry.
 Reference semantics (src/baskerville/models/request_set_cache.py):
 - enrich: batch LEFT-joins the cache on (target, ip), null-coalescing
   duplicate columns (207-251)
-- prune: cache rows restricted to keys present in the batch (253-304 inner
-  join on distinct keys → left_semi here)
 - upsert: FULL_OUTER join on keys, per-column when(new.isNotNull(), new)
   .otherwise(old) (370-400)
 - TTL expiry: updated_at >= now - expire_seconds (404-411), default 86400 s
@@ -48,12 +46,6 @@ def enrich_with_state(
         *keys, *[F.col(c).alias(f"{prefix}{c}") for c in state_cols]
     )
     return batch.join(renamed, on=keys, how="left")
-
-
-def prune_state_to_batch(state: DataFrame, batch: DataFrame, keys: list[str]) -> DataFrame:
-    """Restrict state to keys present in the batch — left_semi (the
-    reference used inner on distinct keys, 253-304; semi is the semantics)."""
-    return state.join(batch.select(*keys).distinct(), on=keys, how="left_semi")
 
 
 def upsert_state(

@@ -1,19 +1,12 @@
-"""Typed schemas for the validation engine + JSON-schema translation.
-
-The reference declares its input schema as a JSON Schema document translated
-to a Spark StructType at runtime (src/baskerville/models/log_parsers.py:128-166,
-type map at 134-139, recursive nested structs at 147-164). We keep that
-capability (``struct_type_from_json_schema``) and add the typed schemas the
-new engine needs: clips, transcript reference dim, verdicts, violations,
-stats rows, baseline snapshots, and the checkpoint manifest.
+"""Typed schemas for the validation engine: clips, transcript reference
+dim, verdicts, violations, stats rows, baseline snapshots, and the
+checkpoint manifest.
 
 Unlike the reference's stringly ``features`` JSON blob
 (src/baskerville/db/models.py:108), all metrics here are typed columns.
 """
 
 from __future__ import annotations
-
-from typing import Any
 
 from pyspark.sql import types as T
 
@@ -116,40 +109,3 @@ MANIFEST_SCHEMA = T.StructType(
         T.StructField("code_version", T.StringType(), True),
     ]
 )
-
-# --------------------------------------------------------------------------
-# JSON-schema translation (reference parity: log_parsers.py:128-166)
-# --------------------------------------------------------------------------
-
-_TYPE_MAP: dict[str, T.DataType] = {
-    "string": T.StringType(),
-    "number": T.FloatType(),
-    "integer": T.IntegerType(),
-    "boolean": T.BooleanType(),
-    "timestamp": T.TimestampType(),
-}
-
-
-def struct_type_from_json_schema(schema_doc: dict[str, Any]) -> T.StructType:
-    """Translate a JSON-Schema-ish document into a StructType.
-
-    Mirrors the reference's translation (log_parsers.py:134-164): the type
-    map {'string'→String, 'number'→Float, 'integer'→Integer,
-    'object'→nested StructType}, recursing into nested objects.
-    """
-    fields = []
-    for name, spec in schema_doc.get("properties", {}).items():
-        jtype = spec.get("type", "string")
-        if jtype == "object":
-            dtype: T.DataType = struct_type_from_json_schema(spec)
-        elif jtype == "array":
-            items = spec.get("items", {"type": "string"})
-            if items.get("type") == "object":
-                elem: T.DataType = struct_type_from_json_schema(items)
-            else:
-                elem = _TYPE_MAP.get(items.get("type", "string"), T.StringType())
-            dtype = T.ArrayType(elem)
-        else:
-            dtype = _TYPE_MAP.get(jtype, T.StringType())
-        fields.append(T.StructField(name, dtype, True))
-    return T.StructType(fields)

@@ -1,2 +1,1 @@
-from baskerville_spark.sources.json_source import read_json_logs  # noqa: F401
-from baskerville_spark.sources.registry import read_table  # noqa: F401
+"""Source readers: range-partitioned JDBC and Kafka-shaped streams."""

@@ -1,55 +1,11 @@
-"""Table source registry: one entry point for every storage format.
-
-The reference hard-wires five source types across its pipelines (raw JSON,
-Kafka, ElasticSearch, JDBC, parquet cache — SURVEY.md §2.1); here a single
-`read_table` dispatches on format, and Iceberg is attempted first when
-requested (jars absent in this container → graceful parquet fallback,
-keeping call sites cluster-portable).
-"""
+"""Range-partitioned parallel JDBC reads (the reference's JDBC source,
+SURVEY.md §2.1)."""
 
 from __future__ import annotations
 
 import re
 
 from pyspark.sql import DataFrame, SparkSession
-
-
-def read_table(
-    spark: SparkSession,
-    path: str,
-    fmt: str = "parquet",
-    schema=None,
-    **options,
-) -> DataFrame:
-    """Read a table by format name: parquet | iceberg | json | csv | orc | jdbc.
-
-    'iceberg' needs the runtime jars on the classpath (standard on a real
-    cluster); without them it falls back to reading the same path as parquet
-    so local tests exercise identical call sites.
-    """
-    if fmt == "iceberg":
-        try:
-            return spark.read.format("iceberg").options(**options).load(path)
-        except Exception:  # jars not on classpath → local fallback
-            fmt = "parquet"
-    reader = spark.read
-    if schema is not None:
-        reader = reader.schema(schema)
-    if options:
-        reader = reader.options(**options)
-    if fmt == "parquet":
-        return reader.parquet(path)
-    if fmt == "json":
-        return reader.json(path)
-    if fmt == "csv":
-        return reader.csv(path)
-    if fmt == "orc":
-        return reader.orc(path)
-    if fmt == "jdbc":
-        # `path` is the table name; connection props (url, driver, ...) come
-        # in via **options
-        return reader.format("jdbc").option("dbtable", path).load()
-    raise ValueError(f"unknown format {fmt!r}")
 
 
 def read_jdbc_partitioned(
@@ -115,95 +71,3 @@ def read_jdbc_partitioned(
         .option("numPartitions", str(num_partitions))
         .load()
     )
-
-
-def write_table(
-    df: DataFrame,
-    path: str,
-    fmt: str = "parquet",
-    mode: str = "overwrite",
-    partition_by: str | None = None,
-    table: str | None = None,
-    **options,
-) -> str:
-    """Write a table by format name, returning the format actually used.
-
-    'iceberg' goes through the native ``writeTo`` path (snapshot-committed
-    appends/replaces, the physical layer BASELINE.json names); without the
-    runtime jars/catalog in this container the attempt fails and the SAME
-    call site falls back to parquet at ``path`` with dynamic partition
-    overwrite — which is also the semantics the runtime layer implements
-    over parquet (runtime/runner.py partitioned sinks, runtime/state.py
-    A/B snapshot pointer). On a real cluster only the session's catalog
-    conf changes; callers can branch on the returned format for logging.
-    """
-    if fmt == "iceberg":
-        try:
-            w = df.writeTo(table or path)
-            if partition_by:
-                from pyspark.sql import functions as F
-
-                w = w.partitionedBy(F.col(partition_by))
-            if mode == "append":
-                w.append()
-            else:
-                w.createOrReplace()
-            return "iceberg"
-        except Exception as exc:
-            # ONLY jars/catalog-absent errors fall back to parquet; on a
-            # cluster WITH Iceberg a real write failure (commit conflict,
-            # schema mismatch, permissions) must surface, not silently
-            # land parquet at a different location
-            msg = str(exc)
-            # TABLE_OR_VIEW_NOT_FOUND is ambiguous: under the default
-            # session catalog (no Iceberg configured) it just means "no
-            # such table here" — the fallback case — but when the
-            # identifier names a REGISTERED non-session catalog it is a
-            # real error (misspelled/uncreated table on a working Iceberg
-            # cluster) and falling back would silently land parquet at a
-            # different location (round-4 review catch).
-            ident_catalog = (table or path).split(".")[0]
-            try:
-                cats = {
-                    c.name for c in df.sparkSession.catalog.listCatalogs()
-                }
-            except Exception:  # pragma: no cover - very old Spark
-                cats = set()
-            real_catalog = (
-                ident_catalog in cats and ident_catalog != "spark_catalog"
-            )
-            if "TABLE_OR_VIEW_NOT_FOUND" in msg and real_catalog:
-                raise
-            if not any(
-                s in msg
-                for s in (
-                    "ClassNotFound",
-                    "Cannot find catalog",
-                    "CATALOG_NOT_FOUND",
-                    "TABLE_OR_VIEW_NOT_FOUND",
-                    "is not a valid Spark catalog",
-                    "NoSuchCatalogException",
-                    # session catalog rejecting the iceberg-style multipart
-                    # identifier = no iceberg catalog is configured
-                    "REQUIRES_SINGLE_PART_NAMESPACE",
-                    "DATA_SOURCE_NOT_FOUND",
-                )
-            ):
-                raise
-            fmt = "parquet"
-    writer = df.write.mode(mode)
-    if options:
-        writer = writer.options(**options)
-    if partition_by:
-        writer = writer.partitionBy(partition_by)
-    if fmt == "parquet":
-        writer.option("partitionOverwriteMode", "dynamic").parquet(path)
-    elif fmt == "orc":
-        writer.orc(path)
-    elif fmt == "csv":
-        writer.csv(path)
-    elif fmt == "json":
-        writer.json(path)
-    else:
-        raise ValueError(f"unknown format {fmt!r}")
-    return fmt

@@ -1,1 +1,1 @@
-from baskerville_spark.streaming.stateful import incremental_group_stats  # noqa: F401
+"""Stateful structured-streaming aggregates."""

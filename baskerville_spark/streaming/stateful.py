@@ -17,7 +17,7 @@ exactly the pruning the reference did manually with a semi-join.
 
 from __future__ import annotations
 
-from typing import Any, Iterable, Iterator, Tuple
+from typing import Iterable, Iterator, Tuple
 
 import pandas as pd
 from pyspark.sql import DataFrame

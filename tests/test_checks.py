@@ -17,8 +17,9 @@ from baskerville_spark.checks.schema_check import (
     pattern_violations,
 )
 from baskerville_spark.checks.stats import column_stats
-from baskerville_spark.checks.uniqueness import duplicate_keys, naive_duplicate_keys
+from baskerville_spark.checks.uniqueness import duplicate_keys
 from baskerville_spark.generator import expected_violation_indices
+from oracles import naive_duplicate_keys
 
 
 def test_salted_equals_naive_uniqueness(t1_clips):
@@ -645,7 +646,8 @@ def test_histogram_psi_matches_driver_fold(spark):
     """histogram_psi on two states == psi_py on the same fractions; PSI of
     a state against itself is exactly 0."""
     from baskerville_spark.checks import stats_state as SS
-    from baskerville_spark.checks.drift import EPS, psi_py
+    from baskerville_spark.checks.drift import EPS
+    from oracles import psi_py
 
     df_a = spark.createDataFrame(
         [(0, float(v)) for v in (50, 150, 150, 500, 1000)], "part int, v double")
@@ -986,6 +988,8 @@ def test_row_level_diff_composite_key(spark):
 
 
 def test_suite_json_roundtrip_and_equivalence(spark):
+    import json
+
     import pytest
 
     from baskerville_spark.checks import suite as S
@@ -999,7 +1003,22 @@ def test_suite_json_roundtrip_and_equivalence(spark):
         S.mean_between("c6", "n_chars", 100.0, 400.0),
         S.approx_distinct_min("c7", "doc_id", 5),
     ]
-    doc = S.suite_to_json(cons)
+    doc = json.dumps({"format": 1, "constraints": [
+        {"name": "c1", "kind": "completeness", "column": "text",
+         "threshold": 0.10, "params": []},
+        {"name": "c2", "kind": "bounds", "column": "n_chars",
+         "threshold": 0.25, "params": [100, 600]},
+        {"name": "c3", "kind": "pattern", "column": "lang",
+         "threshold": 0.0, "params": ["^[a-z]{2}$"]},
+        {"name": "c4", "kind": "membership", "column": "lang",
+         "threshold": 0.3, "params": [["en", "zh"]]},
+        {"name": "c5", "kind": "predicate", "column": None,
+         "threshold": 0.9, "params": ["n_chars >= 100"]},
+        {"name": "c6", "kind": "mean", "column": "n_chars",
+         "threshold": 0.0, "params": [100.0, 400.0]},
+        {"name": "c7", "kind": "approx_distinct", "column": "doc_id",
+         "threshold": 5.0, "params": []},
+    ]})
     back = S.suite_from_json(doc)
     assert back == cons  # frozen dataclasses: exact structural equality
 
@@ -1015,8 +1034,6 @@ def test_suite_json_roundtrip_and_equivalence(spark):
     assert a == b and len(a) == 14
 
     # loud failures: unknown kind, duplicate name, wrong arity, bad format
-    import json
-
     d = json.loads(doc)
     d["constraints"][0]["kind"] = "nope"
     with pytest.raises(ValueError, match="unknown kind"):
@@ -1048,26 +1065,20 @@ def _hist_rows(spark, series, part_id=0, column_name="c", metric_name="m"):
 
 
 def test_metric_history_melt_from_column_stats(spark, t1_clips):
-    from baskerville_spark.checks.history import metric_history_rows
-
-    stats = column_stats(t1_clips.select("part_id", "sr_hz", "codec"))
-    hist = metric_history_rows(stats, run_id=3)
-    rows = hist.collect()
-    assert all(r["run_id"] == 3 for r in rows)
-    by_col = {
-        (r["column_name"], r["metric_name"]): r["metric_value"] for r in rows
-    }
-    # numeric column carries all five metrics, non-numeric drops min/max
-    # (NULL metric rows are dropped, not zero-filled)
-    assert ("sr_hz", "min") in by_col and ("sr_hz", "max") in by_col
-    assert ("codec", "min") not in by_col and ("codec", "max") not in by_col
-    assert ("codec", "count") in by_col and ("codec", "null_rate") in by_col
-    # null_rate is a fraction of total rows per partition
-    assert all(
-        0.0 <= v <= 1.0
-        for (c, m), v in by_col.items()
-        if m == "null_rate"
-    )
+    """The history metrics come straight off ``column_stats`` rows: a
+    numeric column carries min/max, a non-numeric one leaves them NULL
+    (a metric that does not exist is not a zero), and the null rate is a
+    fraction of each partition's rows."""
+    stats = column_stats(t1_clips.select("part_id", "sr_hz", "codec")).collect()
+    by_col = {}
+    for r in stats:
+        by_col.setdefault(r["column_name"], []).append(r)
+    assert set(by_col) == {"sr_hz", "codec"}
+    assert all(r["min"] is not None and r["max"] is not None for r in by_col["sr_hz"])
+    assert all(r["min"] is None and r["max"] is None for r in by_col["codec"])
+    for r in stats:
+        total = r["count"] + r["null_count"]
+        assert total > 0 and 0.0 <= r["null_count"] / total <= 1.0
 
 
 def test_anomaly_flat_history_then_jump(spark):
@@ -1191,8 +1202,22 @@ def test_suggested_suite_roundtrip_all_pass(spark):
     it was profiled from — suggestions are the observed envelope, also
     where 6-decimal rounding would cut it (a min and a max with 7
     decimals; a null rate below 4e-7, which rounds to 0.0)."""
-    from baskerville_spark.checks.suggest import suggested_suite
-    from baskerville_spark.checks.suite import run_suite
+    from baskerville_spark.checks import suite as S
+    from baskerville_spark.checks.suggest import suggest_constraints
+
+    def suite_from_suggestions(df):
+        # 'unique' has no single-pass suite kind; it is left out
+        make = {
+            "completeness": lambda n, r: S.completeness(n, r["col_name"], r["threshold"]),
+            "bounds": lambda n, r: S.bounds(n, r["col_name"], r["lo"], r["hi"]),
+            "membership": lambda n, r: S.membership(
+                n, r["col_name"], r["members"].split(",")),
+        }
+        return [
+            make[r["kind"]](f"{r['col_name']}_{r['kind']}", r)
+            for r in suggest_constraints(df).collect()
+            if r["kind"] in make
+        ]
 
     frames = [
         _suggest_frame(spark),
@@ -1203,9 +1228,9 @@ def test_suggested_suite_roundtrip_all_pass(spark):
         ),
     ]
     for df in frames:
-        cons = suggested_suite(df)
+        cons = suite_from_suggestions(df)
         assert len(cons) >= (6 if df is frames[0] else 2)
-        verdicts = run_suite(df, cons).collect()
+        verdicts = S.run_suite(df, cons).collect()
         assert len(verdicts) == len(cons)
         assert all(r["passed"] for r in verdicts), verdicts
 

@@ -7,7 +7,6 @@ from pyspark.sql import Row
 from pyspark.sql import functions as F
 
 from baskerville_spark.checks.consistency import (
-    payload_byte_verdicts,
     payload_byte_violations,
     speaking_rate_verdicts,
     speaking_rate_violations,
@@ -41,10 +40,6 @@ def test_payload_byte_check(spark):
     assert [(v["clip_id"], v["byte_len"], v["expected_bytes"]) for v in viol] == [
         ("b", 31998, 32000)
     ]
-    v = {r["part_id"]: r for r in payload_byte_verdicts(df).collect()}
-    assert v[0]["n_rows"] == 2 and v[0]["n_violations"] == 1 and not v[0]["passed"]
-    # part 1: only clip e checkable (d has NULL dur), and it matches
-    assert v[1]["n_rows"] == 1 and v[1]["n_violations"] == 0 and v[1]["passed"]
 
 
 def test_speaking_rate_check(spark):
@@ -56,6 +51,38 @@ def test_speaking_rate_check(spark):
          speaking_rate_verdicts(df, min_cps=0.5, max_cps=100.0).collect()}
     assert v[0]["n_rows"] == 3 and v[0]["n_violations"] == 0 and v[0]["passed"]
     assert v[1]["n_rows"] == 1 and v[1]["n_violations"] == 1 and not v[1]["passed"]
+
+
+def test_runner_speaking_rate_default_bound(spark):
+    """``run_validation`` at the default (0.5, 30) chars/s bound, on rows
+    built by hand (every generated clip is far above it): 12 chars/s
+    passes, 200 and 0.2 chars/s fail, and a NULL transcript or a zero
+    duration is not checkable, so it is no speaking-rate violation."""
+    from baskerville_spark.runtime.runner import ValidationConfig, run_validation
+    from baskerville_spark.schema import CLIP_SCHEMA
+
+    cases = [  # clip_id, dur_ms, transcript
+        ("cps_12", 1000, "x" * 12),
+        ("cps_200", 1000, "x" * 200),
+        ("cps_0.2", 10000, "xx"),
+        ("null_transcript", 1000, None),
+        ("zero_dur", 0, "x" * 12),
+    ]
+    clips = spark.createDataFrame(
+        [(cid, None, 16000, dur, "pcm_s16le", tx, 0) for cid, dur, tx in cases],
+        CLIP_SCHEMA,
+    )
+    cfg = ValidationConfig(check_audio=False, check_speaking_rate=True)
+    assert cfg.speaking_rate_bounds == (0.5, 30.0)
+    res = run_validation(spark, clips, cfg=cfg)
+    viol = {
+        r["clip_id"]: r["detail"]
+        for r in res.violations.where("check_name = 'speaking_rate'").collect()
+    }
+    assert viol == {"cps_200": "chars_per_sec=200.0", "cps_0.2": "chars_per_sec=0.2"}
+    (v,) = [r for r in res.verdicts.collect() if r["check_name"] == "speaking_rate"]
+    assert (v["part_id"], v["passed"], v["n_violations"]) == (0, False, 2)
+    res.unpersist()
 
 
 def test_payload_check_on_generated_clips(spark, t1_clips, t1_cfg):

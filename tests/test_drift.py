@@ -2,11 +2,8 @@
 
 from __future__ import annotations
 
-from baskerville_spark.checks.drift import (
-    capture_baseline,
-    drift_verdicts,
-    psi_py,
-)
+from baskerville_spark.checks.drift import capture_baseline, drift_verdicts
+from oracles import psi_py
 
 
 def test_psi_self_is_zero():

@@ -144,7 +144,7 @@ def test_exact_duplicates_bounded_exemplars(spark):
 
     # the salted two-phase form must equal the window form exactly —
     # including on a mixed corpus with unique + duplicated texts
-    from baskerville_spark.functions.dedup import exact_duplicates_window
+    from oracles import exact_duplicates_window
 
     mixed = spark.range(500).select(
         F.col("id").cast("int").alias("doc_id"),

@@ -71,27 +71,6 @@ def test_iforest_null_features_score_null(spark):
     assert got[1] is not None and not np.isnan(got[1])
 
 
-def test_flag_anomalies_contamination_threshold(spark):
-    """Reference transform parity (anomaly_model.py:199-209): flag rows
-    whose score exceeds the (1 - contamination) quantile; planted extreme
-    outliers must be flagged, the dense blob must not drown them, and the
-    rows come out in the engine's violation shape."""
-    from baskerville_spark.ml.iforest import flag_anomalies
-
-    df = _fixture(spark).withColumn("part_id", (F.col("id") % 4).cast("int"))
-    forest = train_iforest(df, "id", ["f1", "f2"], n_trees=50, seed=7)
-    viol = flag_anomalies(
-        df, forest, "id", ["f1", "f2"], contamination=0.01, part_col="part_id"
-    ).collect()
-    flagged = {int(r["clip_id"]) for r in viol}
-    planted = {r["id"] for r in df.where("id % 400 = 7").select("id").collect()}
-    assert planted <= flagged               # every planted outlier flagged
-    assert len(flagged) <= 0.02 * 2000 + 5  # ~contamination-sized set
-    for r in viol:
-        assert r["check_name"] == "anomaly" and r["detail"].startswith("score=")
-        assert r["part_id"] == int(r["clip_id"]) % 4
-
-
 def _labeled_fixture(spark, n=2000):
     """Separable supervised fixture: positives shifted far along f1."""
     return spark.range(n).select(
@@ -127,43 +106,6 @@ def test_gbm_deterministic_and_partition_invariant(spark):
     b = {r["id"]: r["probability"]
          for r in predict_proba(df.repartition(11), m2, "id", ["f1", "f2"]).collect()}
     assert a == b  # hash-deterministic sample + exhaustive fit: no RNG anywhere
-
-
-def test_model_store_roundtrip_and_atomic_current(spark, tmp_path):
-    """Registry parity (reference model rows + saved pipeline dirs,
-    tasks.py:1522-1540): versions are immutable, CURRENT flips atomically,
-    and a loaded model scores bit-identically to the one saved — for both
-    model kinds, with no pickle anywhere."""
-    from baskerville_spark.ml.gbm import predict_proba, train_gbm
-    from baskerville_spark.ml.registry import ModelStore
-
-    store = ModelStore(str(tmp_path / "models"))
-    assert store.current_version() is None
-
-    df = _fixture(spark, 600)
-    forest = train_iforest(df, "id", ["f1", "f2"], n_trees=10, seed=5)
-    v1 = store.save(forest, meta={"features": ["f1", "f2"]})
-    assert store.current_version() == v1
-
-    ldf = _labeled_fixture(spark, 600)
-    gbm = train_gbm(ldf, "id", ["f1", "f2"], "label", n_rounds=10)
-    v2 = store.save(gbm, meta={"label": "label"})
-    assert store.current_version() == v2 and store.versions() == [v1, v2]
-
-    loaded_forest, fmeta = store.load(v1)
-    assert fmeta == {"features": ["f1", "f2"]}
-    a = {r["id"]: r["anomaly_score"]
-         for r in score_anomalies(df, forest, "id", ["f1", "f2"]).collect()}
-    b = {r["id"]: r["anomaly_score"]
-         for r in score_anomalies(df, loaded_forest, "id", ["f1", "f2"]).collect()}
-    assert a == b
-
-    loaded_gbm, _ = store.load()  # CURRENT → the gbm
-    c = {r["id"]: r["probability"]
-         for r in predict_proba(ldf, gbm, "id", ["f1", "f2"]).collect()}
-    d = {r["id"]: r["probability"]
-         for r in predict_proba(ldf, loaded_gbm, "id", ["f1", "f2"]).collect()}
-    assert c == d
 
 
 def test_classify_anomalies_dual_thresholds(spark):

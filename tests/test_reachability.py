@@ -1,0 +1,189 @@
+"""Every top-level def and class in ``baskerville_spark/`` has a production
+caller.
+
+The roots are the entry points: the CLI (``baskerville_spark/main.py``), the
+gate table and driver API of ``__spark_entry__.py``, ``bench.py``,
+``scripts/`` and ``perfbench/`` (its tests excluded). A walk over the source
+ASTs starts at each root file's module-level statements, follows every name
+a reached definition's body mentions through the imports of its module, and
+stops at code outside these files. A definition that only ``tests/``
+reaches is either wired into an entry point, with a test there, or deleted
+with its tests.
+
+The walk over-approximates: a name bound by several imports in one module
+reaches all of them, and reaching a class reaches all of its methods.
+"""
+
+import ast
+from pathlib import Path
+
+ROOT = Path(__file__).resolve().parents[1]
+PKG = "baskerville_spark"
+
+# Definitions kept without a production caller, each with its reason.
+ALLOWED = {
+    # The exposition form the validation-path trace spine is to publish.
+    ("baskerville_spark.runtime.metrics", "render_prometheus"),
+}
+# Definitions an outside driver calls by name.
+DRIVER_API = {"__spark_entry__": ("entry", "queries", "oracle_sql")}
+
+
+def _module_name(path):
+    parts = path.relative_to(ROOT).with_suffix("").parts
+    return ".".join(parts[:-1] if parts[-1] == "__init__" else parts)
+
+
+def _root_files():
+    files = [ROOT / "__spark_entry__.py", ROOT / "bench.py", ROOT / PKG / "main.py"]
+    files += sorted((ROOT / "scripts").glob("*.py"))
+    files += [p for p in sorted((ROOT / "perfbench").rglob("*.py")) if "tests" not in p.parts]
+    return files
+
+
+class _Module:
+    """One source file: what each top-level name is bound to, and the
+    statements that bind it."""
+
+    def __init__(self, path):
+        self.tree = ast.parse(path.read_text(), str(path))
+        self.defs = {}  # name -> [statement]: def, class or assignment
+        self.imports = {}  # name -> {("mod", m) | ("def", m, attr)}
+        self.body = []  # top-level statements that bind no name
+        for stmt in self.tree.body:
+            names = _bound_names(stmt)
+            if names:
+                for n in names:
+                    self.defs.setdefault(n, []).append(stmt)
+            elif not isinstance(stmt, (ast.Import, ast.ImportFrom)):
+                self.body.append(stmt)
+
+    def resolve_imports(self, modules):
+        for node in ast.walk(self.tree):
+            if isinstance(node, ast.Import):
+                for a in node.names:
+                    if a.asname:
+                        self._bind(a.asname, ("mod", a.name))
+                    else:
+                        self._bind(a.name.split(".")[0], ("mod", a.name.split(".")[0]))
+            elif isinstance(node, ast.ImportFrom):  # the code uses no relative imports
+                for a in node.names:
+                    full = f"{node.module}.{a.name}"
+                    target = ("mod", full) if full in modules else ("def", node.module, a.name)
+                    self._bind(a.asname or a.name, target)
+
+    def _bind(self, name, target):
+        self.imports.setdefault(name, set()).add(target)
+
+
+def _bound_names(stmt):
+    if isinstance(stmt, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+        return [stmt.name]
+    targets = []
+    if isinstance(stmt, ast.Assign):
+        targets = stmt.targets
+    elif isinstance(stmt, (ast.AnnAssign, ast.AugAssign)):
+        targets = [stmt.target]
+    return [n.id for t in targets for n in ast.walk(t) if isinstance(n, ast.Name)]
+
+
+def _dotted(node):
+    """``a.b.c`` -> ["a", "b", "c"]; None if the chain does not start at a name."""
+    parts = []
+    while isinstance(node, ast.Attribute):
+        parts.append(node.attr)
+        node = node.value
+    if not isinstance(node, ast.Name):
+        return None
+    return [node.id] + parts[::-1]
+
+
+def _references(stmts):
+    for stmt in stmts:
+        for node in ast.walk(stmt):
+            if isinstance(node, ast.Attribute):
+                chain = _dotted(node)
+                if chain:
+                    yield chain
+            elif isinstance(node, ast.Name):
+                yield [node.id]
+
+
+def _load():
+    paths = {_module_name(p): p for p in sorted((ROOT / PKG).rglob("*.py"))}
+    for p in _root_files():
+        paths.setdefault(_module_name(p), p)
+    modules = {name: _Module(p) for name, p in paths.items()}
+    for m in modules.values():
+        m.resolve_imports(modules)
+    return modules
+
+
+def unreached():
+    """Sorted ``(module, name)`` of every package def/class no root reaches."""
+    modules = _load()
+    seen, loaded = set(), set()
+    work = []
+
+    def load(mod):
+        # Importing a module runs its unbound statements and its packages'.
+        parts = mod.split(".")
+        for i in range(1, len(parts) + 1):
+            m = ".".join(parts[:i])
+            if m in modules and m not in loaded:
+                loaded.add(m)
+                work.append((m, modules[m].body))
+
+    def reach(mod, name, rest=()):
+        """The name ``name`` (then attributes ``rest``) as seen from ``mod``."""
+        m = modules.get(mod)
+        if m is None:
+            return
+        if name in m.defs:
+            if (mod, name) not in seen:
+                seen.add((mod, name))
+                load(mod)
+                work.append((mod, m.defs[name]))
+            return
+        for target in m.imports.get(name, ()):
+            if target[0] == "def":
+                reach(target[1], target[2], rest)
+            else:
+                reach_module(target[1], rest)
+
+    def reach_module(mod, rest):
+        load(mod)
+        if not rest:
+            return
+        sub = f"{mod}.{rest[0]}"
+        if sub in modules:
+            reach_module(sub, rest[1:])
+        else:
+            reach(mod, rest[0], rest[1:])
+
+    for p in _root_files():
+        mod = _module_name(p)
+        load(mod)
+        for name in DRIVER_API.get(mod, ()):
+            reach(mod, name)
+    while work:
+        mod, stmts = work.pop()
+        for chain in _references(stmts):
+            reach(mod, chain[0], chain[1:])
+
+    return sorted(
+        (name, d)
+        for name, m in modules.items()
+        if name.split(".")[0] == PKG
+        for d, stmts in m.defs.items()
+        if any(isinstance(s, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)) for s in stmts)
+        and (name, d) not in seen
+        and (name, d) not in ALLOWED
+    )
+
+
+def test_every_package_definition_has_a_production_caller():
+    missing = unreached()
+    assert not missing, "reached only from tests (delete, or wire into an entry point):\n" + "\n".join(
+        f"  {m}.{d}" for m, d in missing
+    )

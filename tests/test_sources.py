@@ -1,75 +1,6 @@
-"""JSON source with declared schema + enforcement funnel (log_parsers parity)."""
+"""Source reads and table layout: range-partitioned JDBC, bucketed joins."""
 
 from __future__ import annotations
-
-import json
-
-
-SCHEMA_DOC = {
-    "properties": {
-        "host": {"type": "string", "default": "unknown"},
-        "code": {"type": "integer", "pattern": "^[1-5][0-9][0-9]$"},
-        "bytes_sent": {"type": "number", "default": 0.0},
-        "client_ip": {"type": "string"},
-        "geo": {
-            "type": "object",
-            "properties": {"lat": {"type": "number"}, "lon": {"type": "number"}},
-        },
-    },
-    "required": ["host", "code", "client_ip"],
-    "drop_if_missing": ["client_ip"],
-}
-
-
-def test_read_json_logs(spark, tmp_path):
-    from baskerville_spark.sources.json_source import read_json_logs
-
-    p = tmp_path / "logs.json"
-    rows = [
-        {"host": "a.com", "code": 200, "client_ip": "1.2.3.4",
-         "geo": {"lat": 1.0, "lon": 2.0}},
-        {"code": 404, "client_ip": "5.6.7.8"},        # host missing → default
-        {"host": "b.com", "code": 500},                # client_ip null → dropped
-        {"host": "c.com", "code": 301, "client_ip": "9.9.9.9", "bytes_sent": 12.5},
-    ]
-    with open(p, "w") as f:
-        for r in rows:
-            f.write(json.dumps(r) + "\n")
-
-    df = read_json_logs(spark, str(p), SCHEMA_DOC)
-    got = {r["client_ip"]: r for r in df.collect()}
-    assert set(got) == {"1.2.3.4", "5.6.7.8", "9.9.9.9"}
-    assert got["5.6.7.8"]["host"] == "unknown"          # default filled
-    assert got["1.2.3.4"]["geo"]["lat"] == 1.0          # nested struct parsed
-    assert got["9.9.9.9"]["bytes_sent"] == 12.5
-    assert got["1.2.3.4"]["bytes_sent"] == 0.0          # null → default
-
-
-def test_registry_fallback(spark, tmp_path):
-    from baskerville_spark.sources.registry import read_table
-
-    p = str(tmp_path / "t")
-    spark.range(5).write.parquet(p)
-    # iceberg jars absent → parquet fallback reads the same path
-    assert read_table(spark, p, fmt="iceberg").count() == 5
-    assert read_table(spark, p, fmt="parquet").count() == 5
-
-
-def test_registry_csv_orc_json_roundtrip(spark, tmp_path):
-    from baskerville_spark.sources.registry import read_table
-
-    src = spark.range(20).selectExpr("id", "concat('u', id) AS name")
-    expected = {(r["id"], r["name"]) for r in src.collect()}
-
-    for fmt, opts in (
-        ("csv", {"header": "true", "inferSchema": "true"}),
-        ("orc", {}),
-        ("json", {}),
-    ):
-        p = str(tmp_path / fmt)
-        getattr(src.write, fmt)(p, **({"header": True} if fmt == "csv" else {}))
-        df = read_table(spark, p, fmt=fmt, **opts)
-        assert {(r["id"], r["name"]) for r in df.collect()} == expected, fmt
 
 
 DERBY = {"driver": "org.apache.derby.jdbc.EmbeddedDriver"}
@@ -78,7 +9,7 @@ DERBY = {"driver": "org.apache.derby.jdbc.EmbeddedDriver"}
 def test_jdbc_range_partitioned_read(spark, tmp_path):
     """Real JDBC round-trip against embedded Derby (ships in Spark's jars):
     the bounds query must fan the read out into disjoint range partitions."""
-    from baskerville_spark.sources.registry import read_jdbc_partitioned, read_table
+    from baskerville_spark.sources.registry import read_jdbc_partitioned
 
     url = f"jdbc:derby:{tmp_path}/db;create=true"
     src = spark.range(1000).selectExpr(
@@ -98,9 +29,6 @@ def test_jdbc_range_partitioned_read(spark, tmp_path):
     assert df.rdd.getNumPartitions() == 4          # parallel range scans
     assert df.count() == 1000
     assert df.agg({"rid": "sum"}).collect()[0][0] == 999 * 1000 // 2
-
-    # registry jdbc path: `path` is the table name
-    assert read_table(spark, "events", fmt="jdbc", url=url, **DERBY).count() == 1000
 
 
 def test_bucketed_join_avoids_shuffle(spark):
@@ -124,235 +52,3 @@ def test_bucketed_join_avoids_shuffle(spark):
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
         spark.sql("DROP TABLE IF EXISTS bt_a")
         spark.sql("DROP TABLE IF EXISTS bt_b")
-
-
-def test_write_table_iceberg_seam_falls_back(spark, tmp_path):
-    """The Iceberg write seam: fmt='iceberg' attempts the native writeTo
-    path and, with no runtime jars/catalog in this container, the SAME call
-    site lands the data as partitioned parquet — so cluster code and local
-    tests share one write entry point. Returns the format actually used."""
-    from baskerville_spark.sources.registry import write_table
-
-    src = spark.range(100).selectExpr(
-        "id", "CAST(id % 4 AS INT) AS part_id", "CAST(id * 2.0 AS DOUBLE) AS v"
-    )
-    p = str(tmp_path / "iceberg_fallback")
-    used = write_table(
-        src, p, fmt="iceberg", partition_by="part_id", table="local.db.events"
-    )
-    assert used == "parquet"  # jars absent: honest fallback, not a crash
-    back = spark.read.parquet(p)
-    assert back.count() == 100
-    assert {r["part_id"] for r in back.select("part_id").distinct().collect()} == {0, 1, 2, 3}
-
-    # plain parquet path: dynamic partition overwrite replaces ONLY the
-    # partitions present in the new data (the runner's idempotent-retry
-    # semantics)
-    upd = spark.range(10).selectExpr(
-        "id + 1000 AS id", "CAST(0 AS INT) AS part_id", "CAST(0.0 AS DOUBLE) AS v"
-    )
-    write_table(upd, p, fmt="parquet", partition_by="part_id")
-    back2 = spark.read.parquet(p)
-    assert back2.where("part_id = 0").count() == 10     # replaced
-    assert back2.where("part_id != 0").count() == 75    # untouched
-
-
-def test_write_table_v2_catalog_executes_writeTo(spark, tmp_path):
-    """The Iceberg write path EXECUTED against a real DataSourceV2 catalog
-    (VERDICT r04 item #4): no Iceberg jar ships in this container, but Spark
-    ships ``JDBCTableCatalog`` — registering it (Derby-backed) makes
-    ``write_table(fmt='iceberg')`` drive the exact same ``writeTo(...)
-    .createOrReplace()/.append()`` V2 plans Iceberg receives on a cluster
-    (ReplaceTableExec/AppendDataExec, catalog-resolved identifiers), instead
-    of falling back. Also pins the MERGE INTO contract: the state store's
-    upsert statement parses and analyzes all the way to the table-capability
-    check, failing ONLY because this catalog's tables lack
-    SupportsRowLevelOperations (which Iceberg provides)."""
-    import pytest
-
-    from baskerville_spark.sources.registry import write_table
-
-    spark.conf.set(
-        "spark.sql.catalog.lake",
-        "org.apache.spark.sql.execution.datasources.v2.jdbc.JDBCTableCatalog",
-    )
-    spark.conf.set("spark.sql.catalog.lake.url",
-                   f"jdbc:derby:{tmp_path}/v2cat;create=true")
-    spark.conf.set("spark.sql.catalog.lake.driver",
-                   "org.apache.derby.jdbc.EmbeddedDriver")
-    try:
-        df = spark.range(10).selectExpr("id", "CAST(id * 2.0 AS DOUBLE) AS v")
-        used = write_table(
-            df, str(tmp_path / "unused"), fmt="iceberg",
-            mode="overwrite", table="lake.APP.clips",
-        )
-        assert used == "iceberg"          # the V2 path ran — no fallback
-        used = write_table(
-            df, str(tmp_path / "unused"), fmt="iceberg",
-            mode="append", table="lake.APP.clips",
-        )
-        assert used == "iceberg"
-        back = spark.table("lake.APP.clips")
-        assert back.count() == 20         # create(10) + append(10)
-        assert back.agg({"v": "sum"}).collect()[0][0] == 2 * sum(
-            i * 2.0 for i in range(10)
-        )
-
-        # createOrReplace really replaces (not a second append)
-        write_table(
-            spark.range(3).selectExpr("id", "CAST(0.0 AS DOUBLE) AS v"),
-            str(tmp_path / "unused"), fmt="iceberg",
-            mode="overwrite", table="lake.APP.clips",
-        )
-        assert spark.table("lake.APP.clips").count() == 3
-
-        # MERGE INTO: correct statement shape, blocked only by this
-        # catalog's missing row-level-operation capability
-        with pytest.raises(Exception, match="UNSUPPORTED_FEATURE.TABLE_OPERATION"):
-            spark.sql(
-                "MERGE INTO lake.APP.clips t "
-                "USING (SELECT 1 AS id, 9.0 AS v) s ON t.id = s.id "
-                "WHEN MATCHED THEN UPDATE SET t.v = s.v "
-                "WHEN NOT MATCHED THEN INSERT (id, v) VALUES (s.id, s.v)"
-            )
-
-        # a REAL failure against a REGISTERED catalog must surface, not
-        # silently land parquet elsewhere (round-4 review contract)
-        with pytest.raises(Exception, match="TABLE_OR_VIEW_NOT_FOUND"):
-            write_table(
-                df, str(tmp_path / "unused"), fmt="iceberg",
-                mode="append", table="lake.APP.no_such_table",
-            )
-    finally:
-        spark.sql("DROP TABLE IF EXISTS lake.APP.clips")
-        spark.conf.unset("spark.sql.catalog.lake")
-        spark.conf.unset("spark.sql.catalog.lake.url")
-        spark.conf.unset("spark.sql.catalog.lake.driver")
-
-
-def test_save_features_table_roundtrip(spark):
-    """'table' sink = real saveAsTable against the session catalog (the
-    Hive-metastore call on a cluster, tasks.py:1649-1675 — whose reference
-    body is a TileDB copy-paste bug; this is what it meant to do)."""
-    from pyspark.sql import functions as F
-
-    from baskerville_spark.sources.sinks import save_features
-
-    df = spark.createDataFrame(
-        [("u1", 1, 0.9), ("u2", 0, 0.2)],
-        "uuid_request_set string, prediction int, score double",
-    ).withColumn("features", F.create_map(F.lit("f_a"), F.lit(1.5)))
-    used = save_features(
-        df,
-        "table",
-        feature_names=["f_a"],
-        features_col="features",
-        table="rs_test_sink",
-    )
-    assert used == "table"
-    back = spark.table("rs_test_sink")
-    assert sorted(back.columns) == [
-        "f_a", "prediction", "score", "uuid_request_set",
-    ]
-    rows = {r["uuid_request_set"]: r for r in back.collect()}
-    assert rows["u1"]["f_a"] == 1.5 and rows["u1"]["prediction"] == 1
-    spark.sql("DROP TABLE rs_test_sink")
-
-
-def test_connector_sinks_reach_spark_with_exact_format(spark):
-    """The four connector sinks dispatch the reference's exact format
-    strings and option shapes; with the jars absent each raises the
-    documented NotImplementedError naming the connector (same seam
-    contract as the optional media codecs)."""
-    import pytest
-
-    from baskerville_spark.sources.sinks import save_features
-
-    df = spark.createDataFrame(
-        [("u1", 1, 0.9)],
-        "uuid_request_set string, prediction int, score double",
-    )
-    for fmt, needle in [
-        ("tiledb", "io.tiledb.spark"),
-        ("hbase", "datasources.hbase"),
-        ("elasticsearch", "org.elasticsearch.spark.sql"),
-        ("redis", "org.apache.spark.sql.redis"),
-    ]:
-        with pytest.raises(NotImplementedError) as ei:
-            save_features(df, fmt, path="ignored")
-        assert needle in str(ei.value)
-    with pytest.raises(ValueError):
-        save_features(df, "mongodb")
-
-
-def test_iceberg_ddl_generation_and_execution(spark, tmp_path):
-    """The reference's month-partitioned results-store installer
-    (db/__init__.py:31-82: Postgres inheritance + insert triggers) as ONE
-    Iceberg DDL clause. Three contracts: (a) the rendered statement shape;
-    (b) the unpartitioned form EXECUTES against a real V2 catalog
-    (Derby-backed JDBCTableCatalog, same seam as write_table); (c) the
-    partitioned form parses and analyzes to the provider lookup — the
-    exact failure a cluster without Iceberg jars reports."""
-    import pytest
-    from pyspark.sql import types as T
-
-    from baskerville_spark.sources.ddl import iceberg_ddl
-
-    schema = T.StructType(
-        [
-            T.StructField("id", T.LongType(), False),
-            T.StructField("target", T.StringType(), True),
-            T.StructField("score", T.DoubleType(), True),
-            T.StructField("created_at", T.TimestampType(), True),
-        ]
-    )
-    ddl = iceberg_ddl(
-        "lake.APP.request_sets",
-        schema,
-        temporal_col="created_at",
-        granularity="month",
-        bucket_by=("target", 16),
-        table_props={"write.distribution-mode": "hash"},
-    )
-    assert "CREATE TABLE lake.APP.request_sets (" in ddl
-    assert "`id` bigint NOT NULL" in ddl
-    assert "PARTITIONED BY (months(created_at), bucket(16, target))" in ddl
-    assert "TBLPROPERTIES ('write.distribution-mode' = 'hash')" in ddl
-    # round-5 review: quoting — props escape quotes, identifiers backticked
-    assert "'it''s monthly'" in iceberg_ddl(
-        "t", schema, table_props={"comment": "it's monthly"})
-
-    with pytest.raises(ValueError, match="granularity"):
-        iceberg_ddl("t", schema, temporal_col="created_at", granularity="ms")
-    with pytest.raises(ValueError, match="not in schema"):
-        iceberg_ddl("t", schema, temporal_col="nope")
-
-    spark.conf.set(
-        "spark.sql.catalog.lake",
-        "org.apache.spark.sql.execution.datasources.v2.jdbc.JDBCTableCatalog",
-    )
-    spark.conf.set("spark.sql.catalog.lake.url",
-                   f"jdbc:derby:{tmp_path}/ddlcat;create=true")
-    spark.conf.set("spark.sql.catalog.lake.driver",
-                   "org.apache.derby.jdbc.EmbeddedDriver")
-    try:
-        # executable form: V2 catalogs ignore USING for their own storage;
-        # partition transforms need Iceberg, so execute the flat variant
-        flat = iceberg_ddl("lake.APP.request_sets", schema)
-        flat = flat.replace(" USING iceberg", "")
-        spark.sql(flat)
-        assert spark.table("lake.APP.request_sets").columns == [
-            "id", "target", "score", "created_at",
-        ]
-        # the full partitioned statement must parse+analyze up to the
-        # iceberg provider lookup (DATA_SOURCE_NOT_FOUND without the jar)
-        with pytest.raises(Exception, match="DATA_SOURCE_NOT_FOUND|Failed to find"):
-            spark.sql(
-                iceberg_ddl("spark_catalog.default.rs_part", schema,
-                            temporal_col="created_at")
-            )
-    finally:
-        spark.sql("DROP TABLE IF EXISTS lake.APP.request_sets")
-        spark.conf.unset("spark.sql.catalog.lake")
-        spark.conf.unset("spark.sql.catalog.lake.url")
-        spark.conf.unset("spark.sql.catalog.lake.driver")

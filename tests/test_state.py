@@ -1,4 +1,4 @@
-"""State cache (enrich/prune/upsert/expire/StateStore) + streaming stateful."""
+"""State cache (enrich/upsert/expire/StateStore) + streaming stateful."""
 
 from __future__ import annotations
 
@@ -10,7 +10,6 @@ from baskerville_spark.runtime.state import (
     StateStore,
     enrich_with_state,
     expire_state,
-    prune_state_to_batch,
     upsert_state,
 )
 
@@ -52,8 +51,6 @@ def test_enrich_and_prune(spark):
     enriched = {r["k"]: r["old_n"] for r in
                 enrich_with_state(batch, state, ["k"], ["n"]).collect()}
     assert enriched == {"b": 20, "c": None}
-    pruned = {r["k"] for r in prune_state_to_batch(state, batch, ["k"]).collect()}
-    assert pruned == {"b"}
 
 
 def test_expire(spark):

@@ -1,87 +1,7 @@
-"""Native replacements of the reference's web-log UDFs (SURVEY §2.9)."""
+"""Web-log attack verdicts: the reference's Challenge flow and low-rate
+predicate (SURVEY §2.9)."""
 
 from __future__ import annotations
-
-from pyspark.sql import functions as F
-
-from baskerville_spark.functions.web import (
-    challenge_decision,
-    normalize_host,
-    path_depth,
-    remove_www,
-    status_class,
-    url_matches_any,
-)
-
-
-def _one_col(spark, rows, expr):
-    df = spark.createDataFrame([(r,) for r in rows], "x string")
-    return [r["y"] for r in df.select(expr(F.col("x")).alias("y")).collect()]
-
-
-def test_remove_www(spark):
-    out = _one_col(spark, ["WWW.Example.COM:8080", "api.example.com", "www.a.b"], remove_www)
-    assert out == ["example.com", "api.example.com", "a.b"]
-
-
-def test_normalize_host(spark):
-    # longest dot-token heuristic (udfs.py:29-38)
-    out = _one_col(spark, ["www.deflect.ca", "cdn.verylongname.io"], normalize_host)
-    assert out == ["deflect", "verylongname"]
-
-
-def test_url_matches_any(spark):
-    df = spark.createDataFrame(
-        [("/api/v1/users",), ("/static/app.js",), ("/login",), ("/misc",)],
-        "url string",
-    )
-    matched = [
-        r["url"]
-        for r in df.where(
-            url_matches_any(F.col("url"), ["/api/*", "*.js", "/login"])
-        ).collect()
-    ]
-    assert matched == ["/api/v1/users", "/static/app.js", "/login"]
-
-
-def test_status_class_and_path_depth(spark):
-    df = spark.createDataFrame([(404, "/a/b/c"), (200, "/")], "code int, url string")
-    rows = df.select(
-        status_class(F.col("code")).alias("sc"), path_depth(F.col("url")).alias("pd")
-    ).collect()
-    assert [(r["sc"], r["pd"]) for r in rows] == [(4, 3), (2, 1)]
-
-
-def test_challenge_decision(spark):
-    df = spark.createDataFrame([(9, 1), (1, 9), (0, 0)], "a int, n int")
-    out = [
-        r["c"]
-        for r in df.select(
-            challenge_decision(F.col("a"), F.col("n"), 0.5).alias("c")
-        ).collect()
-    ]
-    assert out == [True, False, False]
-
-
-def test_multiply_traffic(spark):
-    from baskerville_spark.functions.web import multiply_traffic
-
-    df = spark.createDataFrame(
-        [("1.1.1.1", "a.com"), ("2.2.2.2", "b.com")], "client_ip string, host string"
-    )
-    out = multiply_traffic(df, factor=5, seed=7)
-    assert out.count() == 10
-    # original traffic survives as copy 0; clones carry synthetic IPs
-    originals = out.where("load_test_copy = 0").select("client_ip").collect()
-    assert {r["client_ip"] for r in originals} == {"1.1.1.1", "2.2.2.2"}
-    n_ips = out.select("client_ip").distinct().count()
-    assert n_ips > 2  # clone IPs fan out per-IP grouping
-    # deterministic: same seed, same result
-    again = multiply_traffic(df, factor=5, seed=7).select("client_ip").distinct().count()
-    assert again == n_ips
-    # ONE scan + explode, not a union of factor copies (factor scans)
-    plan = out._jdf.queryExecution().executedPlan().toString().split("== Initial Plan ==")[0]
-    assert plan.count("Scan ") == 1, plan[:1500]
 
 
 def test_challenge_commands_flow(spark):
