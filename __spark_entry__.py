@@ -84,6 +84,39 @@ def _stream_shuffle(spark: SparkSession):
     return _cm()
 
 
+def _drain_to_memory(spark: SparkSession, stream: DataFrame, mode: str,
+                     tag: str) -> DataFrame:
+    """Drive ``stream`` to completion (``processAllAvailable``) into a
+    uniquely named memory sink under ``_stream_shuffle``; returns the
+    sink's table."""
+    name = f"{tag}_out_{uuid.uuid4().hex[:8]}"
+    with _stream_shuffle(spark):
+        q = stream.writeStream.outputMode(mode).format("memory").queryName(name).start()
+        try:
+            q.processAllAvailable()
+        finally:
+            q.stop()
+    return spark.table(name)
+
+
+def _verdict_grid(verdicts: DataFrame) -> DataFrame:
+    """The closed-form-comparable projection of a verdict table that
+    ``_q21_sql`` reproduces: pass/fail as int, rates rounded to 6 dp, and
+    no metric on range checks (their observed max rides the generator's
+    rng)."""
+    return verdicts.select(
+        F.col("part_id").cast("int").alias("part_id"),
+        "check_name",
+        F.col("passed").cast("int").alias("passed"),
+        F.when(
+            ~F.col("check_name").startswith("range:"),
+            F.round(F.col("metric_value"), 6),
+        ).alias("metric"),
+        F.col("n_rows").cast("long").alias("n_rows"),
+        F.col("n_violations").cast("long").alias("n_violations"),
+    )
+
+
 _CLIP_FIXTURES: dict = {}  # frozen GenConfig -> fixture root
 
 
@@ -754,17 +787,7 @@ def q21_clip_validation(spark: SparkSession, sf_dir: str) -> DataFrame:
     clips = spark.read.parquet(clips_p)
     tref = spark.read.parquet(tref_p)
     res = run_validation(spark, clips, tref, cfg=ValidationConfig())
-    verdicts = res.verdicts.select(
-        "part_id",
-        "check_name",
-        F.col("passed").cast("int").alias("passed"),
-        F.when(
-            ~F.col("check_name").startswith("range:"),
-            F.round(F.col("metric_value"), 6),
-        ).alias("metric"),
-        F.col("n_rows").cast("long").alias("n_rows"),
-        F.col("n_violations").cast("long").alias("n_violations"),
-    )
+    verdicts = _verdict_grid(res.verdicts)
     # materialize the (tiny) verdicts while the upstream caches are alive,
     # then release everything so repeated queries() runs in one session
     # (the driver harness, bench.py) don't accumulate cached blocks
@@ -864,28 +887,16 @@ def q23_streaming_window_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Structured Streaming tumbling-window agg (SURVEY §2.10), driven to
     completion over the events parquet; result equals the batch oracle."""
     e_schema = _t(spark, sf_dir, "events").schema
-    name = f"q23_out_{uuid.uuid4().hex[:8]}"
-    with _stream_shuffle(spark):
-        stream = (
-            spark.readStream.schema(e_schema)
-            .option("pathGlobFilter", "events.parquet")  # stream source needs a dir
-            .parquet(sf_dir)
-            .withColumn("ts", F.col("ts").cast("timestamp"))  # NTZ → event-time type
-            .withWatermark("ts", "1 hour")
-            .groupBy(F.window("ts", "1 hour"), "event_type")
-            .agg(F.count(F.lit(1)).alias("cnt"))
-        )
-        q = (
-            stream.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(name)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-    out = spark.table(name)
+    stream = (
+        spark.readStream.schema(e_schema)
+        .option("pathGlobFilter", "events.parquet")  # stream source needs a dir
+        .parquet(sf_dir)
+        .withColumn("ts", F.col("ts").cast("timestamp"))  # NTZ → event-time type
+        .withWatermark("ts", "1 hour")
+        .groupBy(F.window("ts", "1 hour"), "event_type")
+        .agg(F.count(F.lit(1)).alias("cnt"))
+    )
+    out = _drain_to_memory(spark, stream, "complete", "q23")
     return out.select(
         F.unix_timestamp(F.col("window.start")).alias("bucket_epoch"),
         "event_type",
@@ -1472,29 +1483,17 @@ def q39_streaming_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     exactly-once dedup shape): the deduped (user, type) stream aggregates to
     distinct-user counts per type, equal to the batch DISTINCT oracle."""
     e_schema = _t(spark, sf_dir, "events").schema
-    name = f"q39_out_{uuid.uuid4().hex[:8]}"
-    with _stream_shuffle(spark):
-        stream = (
-            spark.readStream.schema(e_schema)
-            .option("pathGlobFilter", "events.parquet")
-            .parquet(sf_dir)
-            .withColumn("ts", F.col("ts").cast("timestamp"))
-            .withWatermark("ts", "1 hour")
-            .dropDuplicates(["user_id", "event_type"])
-            .select("user_id", "event_type")
-        )
-        q = (
-            stream.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(name)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
+    stream = (
+        spark.readStream.schema(e_schema)
+        .option("pathGlobFilter", "events.parquet")
+        .parquet(sf_dir)
+        .withColumn("ts", F.col("ts").cast("timestamp"))
+        .withWatermark("ts", "1 hour")
+        .dropDuplicates(["user_id", "event_type"])
+        .select("user_id", "event_type")
+    )
     return (
-        spark.table(name)
+        _drain_to_memory(spark, stream, "append", "q39")
         .groupBy("event_type")
         .agg(F.count(F.lit(1)).alias("n_users"))
     )
@@ -2868,17 +2867,7 @@ def q61_resume_verdicts(spark: SparkSession, sf_dir: str) -> DataFrame:
         raise RuntimeError(f"run C expected [], got {run_c}")
 
     verdicts = spark.read.parquet(f"{out_p}/verdicts")
-    return _gate_tmp_detach(verdicts.select(
-        F.col("part_id").cast("int").alias("part_id"),
-        "check_name",
-        F.col("passed").cast("int").alias("passed"),
-        F.when(
-            ~F.col("check_name").startswith("range:"),
-            F.round(F.col("metric_value"), 6),
-        ).alias("metric"),
-        F.col("n_rows").cast("long").alias("n_rows"),
-        F.col("n_violations").cast("long").alias("n_violations"),
-    ), tmp)
+    return _gate_tmp_detach(_verdict_grid(verdicts), tmp)
 
 
 # ---------------------------------------------------------------------------
@@ -3092,28 +3081,16 @@ def q64_stateful_stream_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     tmp = tempfile.mkdtemp(prefix="bsk_q64_")
     src = f"{tmp}/src"
     _split_events_mod3(e.select("event_id", "user_id", "value"), src)
-    name = f"q64_out_{uuid.uuid4().hex[:8]}"
-    with _stream_shuffle(spark):
-        stream = (
-            spark.readStream.schema("user_id long, value double")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-        )
-        out = incremental_group_stats(stream, key_col="user_id", value_col="value")
-        q = (
-            out.writeStream.outputMode("update")
-            .format("memory")
-            .queryName(name)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
+    stream = (
+        spark.readStream.schema("user_id long, value double")
+        .option("maxFilesPerTrigger", 1)
+        .parquet(src)
+    )
+    out = incremental_group_stats(stream, key_col="user_id", value_col="value")
+    rows = _drain_to_memory(spark, out, "update", "q64")
     import shutil
 
     shutil.rmtree(tmp, ignore_errors=True)  # result lives in the memory sink
-    rows = spark.table(name)
     w = Window.partitionBy("key").orderBy(
         F.desc("n_batches"), F.desc("n_total")
     )
@@ -4776,17 +4753,7 @@ def q95_incremental_revalidation(spark: SparkSession, sf_dir: str) -> DataFrame:
         raise RuntimeError(f"run C expected [], got {run_c}")
 
     verdicts = spark.read.parquet(f"{out_p}/verdicts")
-    return _gate_tmp_detach(verdicts.select(
-        F.col("part_id").cast("int").alias("part_id"),
-        "check_name",
-        F.col("passed").cast("int").alias("passed"),
-        F.when(
-            ~F.col("check_name").startswith("range:"),
-            F.round(F.col("metric_value"), 6),
-        ).alias("metric"),
-        F.col("n_rows").cast("long").alias("n_rows"),
-        F.col("n_violations").cast("long").alias("n_violations"),
-    ), tmp)
+    return _gate_tmp_detach(_verdict_grid(verdicts), tmp)
 
 
 def _q95_sql() -> str:
@@ -5275,32 +5242,21 @@ def q104_streaming_rolling_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     e_schema = _t(spark, sf_dir, "events").schema
-    name = f"q104_out_{uuid.uuid4().hex[:8]}"
-    with _stream_shuffle(spark):
-        stream = (
-            spark.readStream.schema(e_schema)
-            .option("pathGlobFilter", "events.parquet")
-            .parquet(sf_dir)
-            .withColumn("ts", F.col("ts").cast("timestamp"))
-            .withWatermark("ts", "1 day")
-            .groupBy(F.window("ts", "1 day"))
-            .agg(*rolling_bucket_aggs("value", DRIFT_VALUE_EDGES))
-        )
-        q = (
-            stream.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(name)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-    counts = spark.table(name).select(
+    stream = (
+        spark.readStream.schema(e_schema)
+        .option("pathGlobFilter", "events.parquet")
+        .parquet(sf_dir)
+        .withColumn("ts", F.col("ts").cast("timestamp"))
+        .withWatermark("ts", "1 day")
+        .groupBy(F.window("ts", "1 day"))
+        .agg(*rolling_bucket_aggs("value", DRIFT_VALUE_EDGES))
+    )
+    sink = _drain_to_memory(spark, stream, "complete", "q104")
+    counts = sink.select(
         F.datediff(F.col("window.start"), F.lit("1970-01-01"))
         .cast("int")
         .alias("window_id"),
-        *[c for c in spark.table(name).columns if c != "window"],
+        *[c for c in sink.columns if c != "window"],
     )
     j, cur_fracs, prv_fracs = pair_window_counts(
         counts, len(DRIFT_VALUE_EDGES) - 1

@@ -26,8 +26,6 @@ ratios derive from the merged row; settled clips are never re-decoded.
 
 from __future__ import annotations
 
-from typing import Sequence
-
 import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -35,7 +33,7 @@ from pyspark.sql import types as T
 
 from baskerville_spark import audio
 
-__all__ = ["decode_state", "per_clip_state", "state_from_per_clip", "merge_decode_states"]
+__all__ = ["decode_state", "merge_decode_states"]
 
 _PER_CLIP_SCHEMA = T.StructType(
     [
@@ -48,47 +46,29 @@ _PER_CLIP_SCHEMA = T.StructType(
 )
 
 # what a clip that fails to decode contributes to the state sums
-STATE_FAIL = (0, 0, 0)
+_STATE_FAIL = (0, 0, 0)
 
 
-def state_kernel(pcm: np.ndarray) -> tuple[int, int, int]:
-    """(n_samples, clipped_samples, sum_abs) of one decoded clip — the
-    per-clip state fields, shared with the SNR invariant's decode pass."""
+def _state_kernel(pcm: np.ndarray) -> tuple[int, int, int]:
+    """(n_samples, clipped_samples, sum_abs) of one decoded clip."""
     a = np.abs(pcm.astype(np.int32))  # |-32768| overflows int16
     return len(pcm), int(np.count_nonzero(a >= 32767)), int(a.sum(dtype=np.int64))
 
 
-def decode_state(
-    clips: DataFrame, group_by: Sequence[str] = ("part_id",)
-) -> DataFrame:
-    """ONE decode pass over ``clips`` -> one mergeable state row per group.
+def decode_state(clips: DataFrame) -> DataFrame:
+    """ONE decode pass over ``clips`` -> one mergeable state row per part_id.
 
     Plan shape: projection(part_id, bytes, codec) → mapInArrow (no shuffle;
     payloads never cross an exchange) → single hash aggregate of narrow
-    longs (map-side partials). The state row is O(groups), not O(clips).
+    longs (map-side partials). The state row is O(partitions), not O(clips).
     Decode success follows ``audio.decode_pass`` — the rule the invariant
     reports — so an empty payload counts as failed on both paths.
     """
-    return state_from_per_clip(per_clip_state(clips), group_by)
-
-
-def per_clip_state(clips: DataFrame) -> DataFrame:
-    """The decode pass behind ``decode_state``: one (part_id, decode_ok,
-    n_samples, clipped_samples, sum_abs) row per clip."""
-    return audio.decode_pass(
+    per_clip = audio.decode_pass(
         clips.select("part_id", "bytes", "codec"), _PER_CLIP_SCHEMA,
-        state_kernel, fail=STATE_FAIL,
+        _state_kernel, fail=_STATE_FAIL,
     )
-
-
-def state_from_per_clip(
-    per_clip: DataFrame, group_by: Sequence[str] = ("part_id",)
-) -> DataFrame:
-    """Aggregate per-clip decode rows (decode_ok, n_samples,
-    clipped_samples, sum_abs — e.g. invariants.audio_invariant output,
-    whose decode pass emits the same fields) into one mergeable state row
-    per group."""
-    return per_clip.groupBy(*group_by).agg(
+    return per_clip.groupBy("part_id").agg(
         F.count(F.lit(1)).alias("n_clips"),
         F.sum(F.col("decode_ok").cast("long")).alias("n_decoded"),
         F.sum((~F.col("decode_ok")).cast("long")).alias("n_failed"),

@@ -19,9 +19,8 @@ cannot belong to their clip — WITHOUT decoding anything:
   screen run before any ASR-based verification.
 
 Scale: both are pure Column arithmetic over the metadata projection — no
-payload scan (the byte length rides in as a precomputed column: at cluster
-scale ``octet_length(bytes)`` is emitted by the same single pass that
-decodes audio, or read from parquet column statistics). Violation rows are
+payload decode (the byte length rides in as a precomputed column,
+``octet_length(bytes)`` or a parquet column statistic). Byte violations are
 a filter with no shuffle; speaking-rate verdicts are one conditional-sum
 shuffle keyed on part_id, identical in shape to stats_verdicts.
 """
@@ -72,23 +71,23 @@ def payload_byte_violations(df: DataFrame) -> DataFrame:
     )
 
 
-def _rate_flags(min_cps: float, max_cps: float) -> tuple[Column, Column, Column]:
-    """(checkable, violated, chars_per_sec) over ``transcript`` and ``dur_ms``."""
+def speaking_rate_verdicts(
+    df: DataFrame, min_cps: float = 0.5, max_cps: float = 30.0
+) -> DataFrame:
+    """Per-partition speaking-rate plausibility verdicts (part_id,
+    check_name, passed, metric_value, threshold, n_rows, n_violations) from
+    one conditional-sum aggregate over ``part_id, transcript, dur_ms``. A
+    row with a NULL transcript, a NULL duration or a zero duration is not
+    checkable: it counts in neither ``n_rows`` nor ``n_violations``."""
     dur = F.col("dur_ms").cast("double")
-    cps = F.length(F.col("transcript")) / (dur / F.lit(1000.0))
+    # a zero duration divides by NULL, not by 0: the aggregate evaluates
+    # cps as a common subexpression ahead of the `checkable &` guard, and
+    # under ANSI mode a division by zero fails the job
+    cps = F.length(F.col("transcript")) / F.when(dur > 0, dur / F.lit(1000.0))
     checkable = (
         F.col("transcript").isNotNull() & F.col("dur_ms").isNotNull() & (dur > 0)
     )
     violated = (cps < F.lit(min_cps)) | (cps > F.lit(max_cps))
-    return checkable, violated, cps
-
-
-def speaking_rate_verdicts(
-    df: DataFrame, min_cps: float = 0.5, max_cps: float = 30.0
-) -> DataFrame:
-    """Per-partition speaking-rate plausibility verdicts (VERDICT shape) from
-    one conditional-sum aggregate over ``part_id, transcript, dur_ms``."""
-    checkable, violated, _ = _rate_flags(min_cps, max_cps)
     return (
         df.groupBy(F.col("part_id").cast("int").alias("part_id"))
         .agg(
@@ -106,20 +105,6 @@ def speaking_rate_verdicts(
             F.col("n_rows").cast("long").alias("n_rows"),
             F.col("n_violations").cast("long").alias("n_violations"),
         )
-    )
-
-
-def speaking_rate_violations(
-    df: DataFrame, min_cps: float = 0.5, max_cps: float = 30.0
-) -> DataFrame:
-    """Violation rows: (part_id, clip_id, check_name, chars_per_sec) over
-    ``part_id, clip_id, transcript, dur_ms``."""
-    checkable, violated, cps = _rate_flags(min_cps, max_cps)
-    return df.where(checkable & violated).select(
-        F.col("part_id").cast("int").alias("part_id"),
-        F.col("clip_id"),
-        F.lit("speaking_rate").alias("check_name"),
-        F.round(cps, 6).alias("chars_per_sec"),
     )
 
 

@@ -20,6 +20,7 @@ is ONE groupBy(part_id) over the fact table per column group, all JVM-side
 
 from __future__ import annotations
 
+from typing import Sequence
 
 from pyspark.sql import Column, DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
@@ -62,14 +63,11 @@ def capture_baseline(
             c: _dedupe_edges(list(snap[f"{c}__q"] or [])) for c in numeric_cols
         }
         # pass 2: ONE agg with conditional sums for every (column, bucket)
-        frac_aggs = []
-        for c, edges in edges_by_col.items():
-            bucket = _bucket_expr(F.col(c).cast("double"), edges[1:-1])
-            notnull = F.col(c).isNotNull()
-            frac_aggs += [
-                F.sum((notnull & (bucket == i)).cast("long")).alias(f"{c}__b{i}")
-                for i in range(len(edges) - 1)
-            ]
+        frac_aggs = [
+            s.alias(f"{c}__b{i}")
+            for c, edges in edges_by_col.items()
+            for i, s in enumerate(bucket_counts(c, edges[1:-1]))
+        ]
         frow = df.agg(*frac_aggs).collect()[0]
         for c, edges in edges_by_col.items():
             counts = [frow[f"{c}__b{i}"] or 0 for i in range(len(edges) - 1)]
@@ -152,12 +150,33 @@ def _dedupe_edges(edges: list[float]) -> list[float]:
     return out
 
 
-def _bucket_expr(col: Column, inner_edges: list[float]) -> Column:
-    """bucket index = #edges strictly below value — a JVM-side sum of casts."""
-    b = F.lit(0)
-    for e in inner_edges:
-        b = b + (col >= F.lit(e)).cast("int")
-    return b
+def bucket_counts(
+    c: str, inner_edges: Sequence[float] = (), categories: Sequence[str] | None = None
+) -> list[Column]:
+    """Non-null rows of column ``c`` per bucket: one conditional sum each,
+    so every bucket of every column rides one aggregate (and composes
+    under partial and micro-batch aggregation). The one copy of the
+    binning the SQL oracles mirror.
+
+    Numeric: bucket i counts values with exactly i of ``inner_edges`` at
+    or below them (bucket 0 = (-inf, e0), last = [e_last, inf)), a
+    JVM-side sum of casts. With ``categories``: bucket i is
+    ``categories[i]``, the last bucket every other value.
+    """
+    col = F.col(c)
+    if categories is None:
+        bucket = F.lit(0)
+        for e in inner_edges:
+            bucket = bucket + (col.cast("double") >= F.lit(float(e))).cast("int")
+        n = len(inner_edges) + 1
+    else:
+        bucket = F.coalesce(
+            *[F.when(col == F.lit(cat), F.lit(i)) for i, cat in enumerate(categories)],
+            F.lit(len(categories)),
+        )
+        n = len(categories) + 1
+    notnull = col.isNotNull()
+    return [F.sum((notnull & (bucket == i)).cast("long")) for i in range(n)]
 
 
 def save_baseline(spark: SparkSession, rows: list[Row], path: str) -> None:
@@ -213,19 +232,6 @@ def _psi_ks_from_fracs(cur_fracs: Column, base_fracs: list[float]) -> tuple[Colu
     return psi, ks
 
 
-def _bucket_for(c: str, baseline_row: Row):
-    """(bucket index Column, n_buckets) for a column, binned per its baseline."""
-    if baseline_row["kind"] == "numeric":
-        inner = list(baseline_row["bin_edges"])[1:-1]
-        return _bucket_expr(F.col(c).cast("double"), inner), len(inner) + 1
-    cats = list(baseline_row["categories"])
-    bucket = F.coalesce(
-        *[F.when(F.col(c) == F.lit(cat), F.lit(i)) for i, cat in enumerate(cats)],
-        F.lit(len(cats)),  # default → OTHER bucket
-    )
-    return bucket, len(cats) + 1
-
-
 def _wide_bucket_agg(
     df: DataFrame, baseline_rows: list[Row]
 ) -> tuple[DataFrame, dict[str, int]]:
@@ -238,13 +244,12 @@ def _wide_bucket_agg(
     buckets: dict[str, int] = {}
     for row in baseline_rows:
         c = row["column_name"]
-        bucket, n_buckets = _bucket_for(c, row)
-        buckets[c] = n_buckets
-        notnull = F.col(c).isNotNull()
-        aggs += [
-            F.sum((notnull & (bucket == i)).cast("long")).alias(f"{c}__b{i}")
-            for i in range(n_buckets)
-        ]
+        if row["kind"] == "numeric":
+            counts = bucket_counts(c, list(row["bin_edges"])[1:-1])
+        else:
+            counts = bucket_counts(c, categories=list(row["categories"]))
+        buckets[c] = len(counts)
+        aggs += [s.alias(f"{c}__b{i}") for i, s in enumerate(counts)]
         aggs.append(F.count(F.col(c)).alias(f"{c}__n"))
     wide = df.groupBy(F.col("part_id").cast("int").alias("part_id")).agg(*aggs)
     return wide, buckets
@@ -254,7 +259,8 @@ def drift_verdicts(
     df: DataFrame,
     baseline_rows: list[Row],
 ) -> DataFrame:
-    """Verdict rows (VERDICT_SCHEMA): psi:<col> and ks:<col> per partition,
+    """Verdict rows (part_id, check_name, passed, metric_value, threshold,
+    n_rows, n_violations): psi:<col> and ks:<col> per partition,
     judged at ``PSI_THRESHOLD`` and ``KS_THRESHOLD``.
 
     ONE scan + ONE shuffle total: every column's per-bucket conditional sums
@@ -309,14 +315,10 @@ def rolling_bucket_aggs(value_col: str, bin_edges: list[float]) -> list[Column]:
     shared by the batch rolling verdicts and their streaming counterpart
     (the exprs are incremental-safe: conditional sums compose under
     micro-batch partial aggregation)."""
-    inner = list(bin_edges)[1:-1]
-    nb = len(inner) + 1
-    bucket = _bucket_expr(F.col(value_col).cast("double"), inner)
-    notnull = F.col(value_col).isNotNull()
-    return [
-        F.sum((notnull & (bucket == i)).cast("long")).alias(f"b{i}")
-        for i in range(nb)
-    ] + [F.count(F.col(value_col)).alias("n")]
+    counts = bucket_counts(value_col, list(bin_edges)[1:-1])
+    return [s.alias(f"b{i}") for i, s in enumerate(counts)] + [
+        F.count(F.col(value_col)).alias("n")
+    ]
 
 
 def pair_window_counts(

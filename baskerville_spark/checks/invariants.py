@@ -16,9 +16,10 @@ Scale notes:
 - Decode is embarrassingly parallel; no shuffle. The only movement is the
   Arrow exchange. numpy work inside is per-clip vectorized.
 - Output is narrow (booleans + floats) — payload bytes are dropped on the
-  Python side and never re-serialized. ``transcript_ok``, ``byte_len`` and
-  the echoed metadata are SQL in the projection in front of the pass and
-  ride through it; the Python side only decodes.
+  Python side and never re-serialized. ``transcript_ok`` is SQL in the
+  projection in front of the pass and rides through it; the Python side
+  only decodes. The result holds exactly the columns
+  ``invariant_violations`` reads.
 """
 
 from __future__ import annotations
@@ -29,7 +30,6 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from baskerville_spark import audio
-from baskerville_spark.checks.audio_state import STATE_FAIL, state_kernel
 
 INVARIANT_RESULT_SCHEMA = T.StructType(
     [
@@ -39,23 +39,6 @@ INVARIANT_RESULT_SCHEMA = T.StructType(
         T.StructField("snr_ok", T.BooleanType(), False),
         T.StructField("decode_ok", T.BooleanType(), False),
         T.StructField("transcript_ok", T.BooleanType(), True),
-        # appended at the END (never mid-schema: positional consumers —
-        # checkpointed state, Arrow batches — must keep old offsets valid).
-        # byte_len + echoed metadata make the result self-sufficient for the
-        # payload byte-consistency check WITHOUT a clip_id join back to the
-        # metadata projection — clip_id is NOT unique (duplicate injection is
-        # what the uniqueness check detects), so such a join cross-matches
-        # dup rows and fabricates violations.
-        T.StructField("byte_len", T.LongType(), True),
-        T.StructField("sr_hz", T.IntegerType(), True),
-        T.StructField("dur_ms", T.IntegerType(), True),
-        T.StructField("codec", T.StringType(), True),
-        # decode-QA state fields (checks/audio_state.py) — ride the SAME
-        # decode pass so emit_audio_states costs no extra payload IO;
-        # appended at the END per the positional-consumer rule above.
-        T.StructField("n_samples", T.LongType(), False),
-        T.StructField("clipped_samples", T.LongType(), False),
-        T.StructField("sum_abs", T.LongType(), False),
     ]
 )
 
@@ -68,7 +51,7 @@ def _snr_kernel(pcm: np.ndarray, clip_id: str, sr_hz: int | None) -> tuple:
     ref = audio.synth_pcm_n(clip_id, sr, len(pcm))
     s = audio.snr_db(ref, pcm)
     snr = 999.0 if s == float("inf") else s
-    return (snr, bool(s >= audio.SNR_THRESHOLD_DB)) + state_kernel(pcm)
+    return snr, bool(s >= audio.SNR_THRESHOLD_DB)
 
 
 def audio_invariant(
@@ -81,7 +64,7 @@ def audio_invariant(
     case is the referential-integrity check's job, not this one's). The
     transcript dimension is broadcast into the join.
     """
-    cols = ["part_id", "clip_id", "bytes", "sr_hz", "dur_ms", "codec", "transcript"]
+    cols = ["part_id", "clip_id", "bytes", "sr_hz", "codec", "transcript"]
     df = clips.select(*cols)
     if transcript_ref is not None:
         dim = F.broadcast(transcript_ref.select("clip_id", "transcript_ref"))
@@ -91,20 +74,20 @@ def audio_invariant(
         )
     else:
         transcript_ok = "CAST(NULL AS BOOLEAN)"
-    # SQL text (checks/sqltext): the pass-through columns are computed in
-    # the projection; byte_len is an O(1) offsets read, no payload copy
+    # SQL text (checks/sqltext): transcript_ok is computed in the projection
     df = df.selectExpr(
-        "part_id", "clip_id", "bytes", "sr_hz", "dur_ms", "codec",
-        f"{transcript_ok} AS transcript_ok", "octet_length(bytes) AS byte_len",
+        "part_id", "clip_id", "bytes", "sr_hz", "codec",
+        f"{transcript_ok} AS transcript_ok",
     )
     return audio.decode_pass(
         df, INVARIANT_RESULT_SCHEMA, _snr_kernel, args=("clip_id", "sr_hz"),
-        fail=(None, False) + STATE_FAIL,
+        fail=(None, False),
     )
 
 
 def invariant_violations(results: DataFrame) -> DataFrame:
-    """Violation rows (VIOLATION_SCHEMA) from invariant results.
+    """Violation rows (part_id, clip_id, check_name, detail) from invariant
+    results.
 
     Single scan: both violation kinds are emitted from one conditional-array
     explode so the (expensive) upstream decode plan is traversed once, not

@@ -36,6 +36,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from baskerville_spark.checks import sqltext
+from baskerville_spark.checks.drift import bucket_counts
 
 __all__ = [
     "sketchable",
@@ -184,24 +185,11 @@ def finalize_stats(
 # --------------------------------------------------------------------------
 
 
-def _hist_bucket(col: Column, inner_edges: Sequence[float]) -> Column:
-    """bucket = #edges <= value — same convention as drift._bucket_expr
-    (bin 0 = (-inf, e0), bin i = [e_{i-1}, e_i), last = [e_last, inf))."""
-    b = F.lit(0)
-    for e in inner_edges:
-        b = b + (col >= F.lit(float(e))).cast("int")
-    return b
-
-
 def _hist_counts(c: str, edges: Sequence[float]) -> Column:
-    """array<long> of len(edges)+1 exact bin counts as conditional SUMs
+    """array<long> of len(edges)+1 exact bin counts (bin 0 = (-inf, e0),
+    bin i = [e_{i-1}, e_i), last = [e_last, inf)) as conditional SUMs
     (NULLs excluded — track them via stats_state's ``{c}_nulls``)."""
-    inner = [float(e) for e in edges]
-    b = _hist_bucket(F.col(c), inner)
-    return F.array(*[
-        F.sum((F.col(c).isNotNull() & (b == i)).cast("long"))
-        for i in range(len(inner) + 1)
-    ])
+    return F.array(*bucket_counts(c, edges))
 
 
 def _hist_merge(hist_col: str, nb: int) -> Column:

@@ -191,8 +191,8 @@ def duplicate_exemplars(
 
 
 def uniqueness_violations(df: DataFrame, n_salt: int = 64) -> DataFrame:
-    """Violation rows (VIOLATION_SCHEMA shape) for clip_ids duplicated
-    within a ``part_id``."""
+    """Violation rows (part_id, clip_id, check_name, detail) for clip_ids
+    duplicated within a ``part_id``."""
     dups = duplicate_keys(df, n_salt=n_salt)
     # SQL text: one py4j call where Column algebra took dozens (checks/sqltext)
     return dups.selectExpr(

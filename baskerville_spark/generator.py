@@ -88,16 +88,7 @@ def clip_id_of(i: int, cfg: GenConfig) -> str:
 
 def canonical_transcript(clip_id: str) -> str:
     """The clip's reference transcript: 3 to 11 words of ``_WORDS``, seeded
-    by ``clip_id``.
-
-    On the 50-500 ms clips of the default ``GenConfig`` this is a speaking
-    rate of about 28-1,560 chars/s (median about 155 on 500 clips), far
-    above the default ``(0.5, 30)`` speaking-rate bound: every generated
-    clip with a duration fails it (498 of 500). Tests that run
-    ``check_speaking_rate`` on generated clips widen the bound, and the
-    default bound is tested on hand-built rows. Gate oracles depend on
-    this output, so it stays as is.
-    """
+    by ``clip_id``."""
     rng = np.random.default_rng(audio.clip_seed(clip_id) ^ 0xA5A5)
     k = int(rng.integers(3, 12))
     return " ".join(rng.choice(_WORDS, size=k))

@@ -14,12 +14,12 @@ check names (or the sink) it owns, the inputs it reads, when it is enabled
 (a predicate on the config and the caller's frames) and its builder, whose
 projection is SQL text (``checks/sqltext``). ``run_validation`` compiles it:
 every violation row joins one union whose check names form the pass/fail
-grid, every verdict row one verdict union. Each input (``_INPUTS``: the slim
-projection, its stats, the transcript dimension, the baseline, the decode
-pass) is built at most once and only when an enabled row reads it; an input
-that two or more consumers read is persisted and filled eagerly, so no clip
-is decoded twice. ``_resolve`` alone picks the fallbacks when the invariant
-is off. Adding a check means one row in ``CHECKS`` plus one test.
+grid, every verdict row one verdict union. The inputs are the caller's
+clips, transcript dimension and baseline, the slim projection and its
+stats. Every metadata check and the stats read the slim projection, and
+the stats sink and the verdict grid read the stats, so both are persisted
+and filled eagerly; only the invariant row decodes payloads, once per
+clip. Adding a check means one row in ``CHECKS`` plus one test.
 
 Scale design (100 TB):
 - ONE payload-free projection of the fact table is materialized and feeds
@@ -45,18 +45,16 @@ from __future__ import annotations
 
 import json
 import sys
-from collections import Counter, defaultdict
+from collections import defaultdict
 from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 from datetime import datetime, timezone
 from functools import reduce
-from typing import Callable, NamedTuple
+from typing import Callable
 
 from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 
-from baskerville_spark.checks import audio_state as audio_state_mod
-from baskerville_spark.checks import consistency
 from baskerville_spark.checks import drift as drift_mod
 from baskerville_spark.checks import invariants as inv_mod
 from baskerville_spark.checks import referential, sqltext, stats, uniqueness
@@ -78,11 +76,6 @@ CLIP_SPECS = [
 
 #: the payload-free projection every metadata check reads
 META_COLS = ("part_id", "clip_id", "sr_hz", "dur_ms", "codec", "transcript")
-#: categorical columns of the chi2 mix check, judged on Cramér's V: 0.2 is a
-#: "medium effect" (the PSI_THRESHOLD convention). A hot drifted partition
-#: also lifts every clean partition's complement V; the bound clears that.
-CATEGORICAL_COLS = ("codec",)
-CRAMERS_V_MAX = 0.2
 #: columns whose HLL sketch rides the mergeable state rows
 STATE_DISTINCT_COLS = ("clip_id",)
 
@@ -96,26 +89,12 @@ class ValidationConfig:
     n_salt: int = 64
     check_audio: bool = True
     numeric_cols: tuple = ("sr_hz", "dur_ms")
-    # metadata-consistency checks (checks/consistency.py); off by default so
-    # existing verdict grids (and their closed-form oracles) are unchanged
-    check_payload_bytes: bool = False
-    check_speaking_rate: bool = False
-    speaking_rate_bounds: tuple = (0.5, 30.0)
     # mergeable per-partition state rows (checks/stats_state.py): written to
     # {out_dir}/states so table-level stats fold from tiny state rows
     # instead of rescanning settled partitions. Off by default — existing
     # verdict grids and sink layouts are unchanged.
     emit_states: bool = False
     state_hist_edges: dict = field(default_factory=dict)  # col -> bin edges
-    # per-partition chi-squared homogeneity of each categorical column's
-    # mix vs the REST of the table (checks/drift.chi2_homogeneity) —
-    # judged on Cramér's V (scale-free effect size: raw chi2 is always
-    # "significant" at 10^12 rows), verdict rows chi2:<col>. Off by
-    # default so existing verdict grids/oracles are unchanged.
-    check_categorical_mix: bool = False
-    # additive decode-QA states (checks/audio_state.py) to {out}/audio_states
-    # — settled clips are never re-decoded. Needs a bytes column.
-    emit_audio_states: bool = False
     # user-declared constraint suite (checks/suite.py Constraints, e.g. from
     # suite_from_json): ONE extra aggregate over the slim projection, as
     # suite:<name> verdict rows. Constraints may reference only META_COLS —
@@ -129,7 +108,6 @@ class ValidationResult:
     violations: DataFrame
     stats: DataFrame
     states: DataFrame | None = None
-    audio_states: DataFrame | None = None
     persisted: list = field(default_factory=list)
 
     def unpersist(self) -> None:
@@ -175,88 +153,15 @@ def _violation_verdicts(
     )
 
 
-class _Given(NamedTuple):  # the caller's frames
-    clips: DataFrame
-    tref: DataFrame | None
-    baseline: list | None
-
-
-#: input name -> (inputs it reads, builder(given, cfg, *those inputs)).
-#: ``tref`` and ``baseline`` are the caller's: never built, never persisted.
-_INPUTS: dict[str, tuple[tuple[str, ...], Callable]] = {
-    "slim": ((), lambda g, cfg: g.clips.select(
-        *[c for c in META_COLS if c in g.clips.columns])),
-    "stats": (("slim",), lambda g, cfg, slim: stats.column_stats(
-        slim, numeric_cols=list(cfg.numeric_cols),
-        other_cols=["clip_id", "codec", "transcript"])),
-    "tref": ((), lambda g, cfg: g.tref),
-    "baseline": ((), lambda g, cfg: g.baseline),
-    # byte_len and the echoed metadata ride out of the decode pass, so the
-    # byte check needs no clip_id join back to slim (clip_id is not unique:
-    # a join would cross-match duplicate rows)
-    "decode": ((), lambda g, cfg: inv_mod.audio_invariant(g.clips, g.tref)),
-    "byte_scan": ((), lambda g, cfg: g.clips.selectExpr(
-        "part_id", "clip_id", "codec", "sr_hz", "dur_ms",
-        "length(bytes) AS byte_len")),
-    "state_pass": ((), lambda g, cfg: audio_state_mod.per_clip_state(g.clips)),
-}
-_GIVEN = ("tref", "baseline")
-
-
-def _resolve(name: str, cfg: ValidationConfig) -> str:
-    """The input behind a row's logical input: with the invariant on, the
-    byte check and the audio states read its decode pass; without it they
-    fall back to a byte-length scan and a decode pass of their own."""
-    if name in ("byte_len", "clip_state"):
-        if cfg.check_audio:
-            return "decode"
-        return "byte_scan" if name == "byte_len" else "state_pass"
-    return name
-
-
 @dataclass(frozen=True)
 class Check:
     """One built-in check: a row of ``CHECKS``."""
 
     owns: tuple          # verdict check names (exact for violation rows) or the sink
-    sink: str            # violations | verdicts | states | audio_states
-    reads: tuple         # logical inputs handed to ``build`` after cfg
-    enabled: Callable[[ValidationConfig, _Given], bool]
+    sink: str            # violations | verdicts | states
+    reads: tuple         # inputs handed to ``build`` after cfg
+    enabled: Callable[[ValidationConfig, dict], bool]  # (cfg, inputs by name)
     build: Callable[..., DataFrame]
-
-
-def _speaking_rate(cfg: ValidationConfig, slim: DataFrame) -> DataFrame:
-    lo, hi = cfg.speaking_rate_bounds
-    return consistency.speaking_rate_violations(slim, min_cps=lo, max_cps=hi).selectExpr(
-        "part_id", "clip_id", "check_name",
-        "concat('chars_per_sec=', CAST(chars_per_sec AS STRING)) AS detail",
-    )
-
-
-def _payload_bytes(cfg: ValidationConfig, per_clip: DataFrame) -> DataFrame:
-    return consistency.payload_byte_violations(per_clip).selectExpr(
-        "part_id", "clip_id", "check_name",
-        "concat('byte_len=', CAST(byte_len AS STRING),"
-        " ' expected=', CAST(expected_bytes AS STRING)) AS detail",
-    )
-
-
-def _categorical_mix(cfg: ValidationConfig, slim: DataFrame) -> DataFrame:
-    v = sqltext.lit(CRAMERS_V_MAX)
-    return reduce(DataFrame.unionByName, [
-        drift_mod.chi2_homogeneity(slim, "part_id", c).selectExpr(
-            "CAST(part_id AS INT) AS part_id",
-            f"{sqltext.lit(f'chi2:{c}')} AS check_name",
-            # single-partition tables (n_rest = 0) have no complement to
-            # test against: undefined, not failed
-            f"coalesce(cramers_v <= {v}, true) AS passed",
-            "CAST(cramers_v AS DOUBLE) AS metric_value",
-            f"{v} AS threshold",
-            "CAST(n_group AS BIGINT) AS n_rows",
-            "CAST(NULL AS BIGINT) AS n_violations",
-        )
-        for c in CATEGORICAL_COLS
-    ])
 
 
 def _suite(cfg: ValidationConfig, slim: DataFrame) -> DataFrame:
@@ -277,35 +182,27 @@ def _states(cfg: ValidationConfig, slim: DataFrame) -> DataFrame:
 
 #: Every built-in check, in union order.
 CHECKS: tuple[Check, ...] = (
-    Check(("null_rate:*", "range:*"), "verdicts", ("stats",), lambda cfg, g: True,
+    Check(("null_rate:*", "range:*"), "verdicts", ("stats",), lambda cfg, i: True,
           lambda cfg, st: stats.stats_verdicts(st, cfg.null_rate_max, cfg.range_bounds)),
-    Check(("uniqueness",), "violations", ("slim",), lambda cfg, g: True,
+    Check(("uniqueness",), "violations", ("slim",), lambda cfg, i: True,
           lambda cfg, slim: uniqueness.uniqueness_violations(slim, n_salt=cfg.n_salt)),
     Check(("ref_integrity",), "violations", ("slim", "tref"),
-          lambda cfg, g: g.tref is not None,
+          lambda cfg, i: i["tref"] is not None,
           lambda cfg, slim, tref: referential.ref_integrity_violations(slim, tref)),
     Check(tuple(f"pattern:{s.name}" for s in CLIP_SPECS if s.pattern),
           "violations", ("slim",),
-          lambda cfg, g: any(s.pattern and s.name in g.clips.columns
+          lambda cfg, i: any(s.pattern and s.name in i["clips"].columns
                              for s in CLIP_SPECS),
           lambda cfg, slim: pattern_violations(slim, CLIP_SPECS)),
-    Check(("speaking_rate",), "violations", ("slim",),
-          lambda cfg, g: cfg.check_speaking_rate, _speaking_rate),
-    Check(("snr", "decode_error", "transcript_eq"), "violations", ("decode",),
-          lambda cfg, g: cfg.check_audio,
-          lambda cfg, inv: inv_mod.invariant_violations(inv)),
-    Check(("payload_bytes",), "violations", ("byte_len",),
-          lambda cfg, g: cfg.check_payload_bytes, _payload_bytes),
+    Check(("snr", "decode_error", "transcript_eq"), "violations", ("clips", "tref"),
+          lambda cfg, i: cfg.check_audio,
+          lambda cfg, clips, tref: inv_mod.invariant_violations(
+              inv_mod.audio_invariant(clips, tref))),
     Check(("psi:*", "ks:*"), "verdicts", ("slim", "baseline"),
-          lambda cfg, g: bool(g.baseline),
+          lambda cfg, i: bool(i["baseline"]),
           lambda cfg, slim, base: drift_mod.drift_verdicts(slim, base)),
-    Check(tuple(f"chi2:{c}" for c in CATEGORICAL_COLS), "verdicts", ("slim",),
-          lambda cfg, g: cfg.check_categorical_mix, _categorical_mix),
-    Check(("suite:*",), "verdicts", ("slim",), lambda cfg, g: bool(cfg.extra_suite), _suite),
-    Check(("states",), "states", ("slim",), lambda cfg, g: cfg.emit_states, _states),
-    Check(("audio_states",), "audio_states", ("clip_state",),
-          lambda cfg, g: cfg.emit_audio_states,
-          lambda cfg, per_clip: audio_state_mod.state_from_per_clip(per_clip)),
+    Check(("suite:*",), "verdicts", ("slim",), lambda cfg, i: bool(cfg.extra_suite), _suite),
+    Check(("states",), "states", ("slim",), lambda cfg, i: cfg.emit_states, _states),
 )
 
 
@@ -334,48 +231,23 @@ def run_validation(
     results table and reading back — same O(output) cost.
     """
     cfg = cfg or ValidationConfig()
-    given = _Given(clips, transcript_ref, baseline_rows)
-    rows = [c for c in CHECKS if c.enabled(cfg, given)]
-    reads = [[_resolve(n, cfg) for n in c.reads] for c in rows]
-
-    # consumers per input: enabled rows, the inputs built on it, and the
-    # stats sink plus the violation grid's row counts (both read `stats`)
-    uses = Counter(n for r in reads for n in r) + Counter(stats=2)
-    needed = list(uses)
-    for n in needed:  # grows while it is walked
-        for dep in _INPUTS[n][0]:
-            uses[dep] += 1
-            if dep not in needed:
-                needed.append(dep)
-    shared = [n for n in _INPUTS if n not in _GIVEN and uses[n] >= 2]
-
-    frames: dict[str, DataFrame] = {}
-    persisted: list[DataFrame] = []
-
-    def get(name: str) -> DataFrame:
-        if name not in frames:
-            deps, build = _INPUTS[name]
-            frames[name] = build(given, cfg, *map(get, deps))
-            if name in shared:
-                frames[name] = frames[name].persist()
-                persisted.append(frames[name])
-        return frames[name]
-
-    # shared inputs that read no other shared input (slim, the decode
-    # pass) fill first; the rest (stats) fill with the violation union,
-    # which reads only first-fill inputs
-    first = [n for n in shared if not set(_INPUTS[n][0]) & set(shared)]
-    _fill([get(n) for n in first])
-    last = [get(n) for n in shared if n not in first]
+    # slim fills first, so the stats and the checks read its cache
+    slim = clips.select(*[c for c in META_COLS if c in clips.columns]).persist()
+    _fill([slim])
+    st = stats.column_stats(
+        slim, numeric_cols=list(cfg.numeric_cols),
+        other_cols=["clip_id", "codec", "transcript"],
+    ).persist()
+    inputs = {"clips": clips, "tref": transcript_ref, "baseline": baseline_rows,
+              "slim": slim, "stats": st}
+    rows = [c for c in CHECKS if c.enabled(cfg, inputs)]
 
     out: dict[str, list[DataFrame]] = defaultdict(list)
-    for c, r in zip(rows, reads):
-        out[c.sink].append(c.build(cfg, *map(get, r)))
+    for c in rows:
+        out[c.sink].append(c.build(cfg, *(inputs[n] for n in c.reads)))
     violations = reduce(DataFrame.unionByName, out["violations"]).persist()
-    persisted.append(violations)
-    _fill(last + [violations])
+    _fill([st, violations])
 
-    st = get("stats")
     part_rows = st.where("column_name = 'clip_id'").selectExpr(
         "part_id", "`count` + null_count AS n_rows"
     )  # per-partition row counts from stats: no extra scan of the fact
@@ -387,8 +259,7 @@ def run_validation(
 
     return ValidationResult(
         verdicts=sink("verdicts"), violations=violations, stats=st,
-        states=sink("states"), audio_states=sink("audio_states"),
-        persisted=persisted,
+        states=sink("states"), persisted=[slim, st, violations],
     )
 
 
@@ -515,7 +386,7 @@ def run_resumable(
     # first makes retry semantics replace-always, not replace-if-nonempty.
     # Driver-side metadata calls against the FS only — no data moves.
     sinks = [("violations", observed)] + [
-        (n, getattr(res, n)) for n in ("stats", "verdicts", "states", "audio_states")
+        (n, getattr(res, n)) for n in ("stats", "verdicts", "states")
         if getattr(res, n) is not None
     ]
     _delete_pending_sink_dirs(

@@ -1,6 +1,5 @@
 """Typed schemas for the validation engine: clips, transcript reference
-dim, verdicts, violations, stats rows, baseline snapshots, and the
-checkpoint manifest.
+dim, baseline snapshots, and the checkpoint manifest.
 
 Unlike the reference's stringly ``features`` JSON blob
 (src/baskerville/db/models.py:108), all metrics here are typed columns.
@@ -38,48 +37,8 @@ TRANSCRIPT_REF_SCHEMA = T.StructType(
 )
 
 # --------------------------------------------------------------------------
-# Output tables
+# Drift baselines and the checkpoint manifest
 # --------------------------------------------------------------------------
-
-#: One row per (part_id, check). Analog of the reference RequestSet verdict
-#: row (src/baskerville/db/models.py:78-160: prediction/score/label per group)
-#: and its threshold verdict (tasks.py:1784-1794).
-VERDICT_SCHEMA = T.StructType(
-    [
-        T.StructField("part_id", T.IntegerType(), False),
-        T.StructField("check_name", T.StringType(), False),
-        T.StructField("passed", T.BooleanType(), False),
-        T.StructField("metric_value", T.DoubleType(), True),
-        T.StructField("threshold", T.DoubleType(), True),
-        T.StructField("n_rows", T.LongType(), True),
-        T.StructField("n_violations", T.LongType(), True),
-    ]
-)
-
-#: One row per violating clip.
-VIOLATION_SCHEMA = T.StructType(
-    [
-        T.StructField("part_id", T.IntegerType(), False),
-        T.StructField("clip_id", T.StringType(), False),
-        T.StructField("check_name", T.StringType(), False),
-        T.StructField("detail", T.StringType(), True),
-    ]
-)
-
-#: Per-(partition, column) statistics row — the typed replacement of the
-#: reference's MapType feature blob (base_spark.py:818-829).
-STATS_SCHEMA = T.StructType(
-    [
-        T.StructField("part_id", T.IntegerType(), False),
-        T.StructField("column_name", T.StringType(), False),
-        T.StructField("count", T.LongType(), True),
-        T.StructField("null_count", T.LongType(), True),
-        T.StructField("min", T.DoubleType(), True),
-        T.StructField("max", T.DoubleType(), True),
-        T.StructField("approx_distinct", T.LongType(), True),
-        T.StructField("quantiles", T.ArrayType(T.DoubleType()), True),
-    ]
-)
 
 #: Baseline snapshot for drift checks — the generalization of the reference's
 #: per-target avg/stddev snapshot (src/baskerville/models/incident_detector.py:264-289).

@@ -116,7 +116,6 @@ def edge_outputs(spark) -> dict:
         "invariant": inv,
         "invariant_violations": INV.invariant_violations(inv),
         "decode_state": AS.decode_state(clips),
-        "state_from_invariant": AS.state_from_per_clip(inv),
         "resample": AQ.audio_resample(clips, 8000),
         "downmix": AQ.audio_downmix(clips),
         "trim_silence": AQ.audio_trim_silence(clips),

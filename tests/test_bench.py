@@ -12,9 +12,9 @@ from types import SimpleNamespace
 
 import pytest
 
-BENCH = Path(__file__).resolve().parents[1] / "bench.py"
-sys.path.insert(0, str(BENCH.parent))
-import bench  # noqa: E402
+import bench
+
+BENCH = Path(bench.__file__)
 
 
 def test_time_gates_returns_failed_gate(monkeypatch):

@@ -9,7 +9,6 @@ from pyspark.sql import functions as F
 from baskerville_spark.checks.consistency import (
     payload_byte_violations,
     speaking_rate_verdicts,
-    speaking_rate_violations,
 )
 from baskerville_spark.functions.dedup import decontaminate
 from baskerville_spark.functions.packing import pack_sequences, packed_bin_summary
@@ -44,9 +43,7 @@ def test_payload_byte_check(spark):
 
 def test_speaking_rate_check(spark):
     df = _meta_rows(spark)
-    # 50 chars / 1.0 s = 50 cps; 4000 chars / 0.333 s = 12012 cps
-    viol = speaking_rate_violations(df, min_cps=0.5, max_cps=100.0).collect()
-    assert [r["clip_id"] for r in viol] == ["e"]
+    # 50 chars / 1.0 s = 50 cps; 4000 chars / 0.333 s = 12012 cps (clip e)
     v = {r["part_id"]: r for r in
          speaking_rate_verdicts(df, min_cps=0.5, max_cps=100.0).collect()}
     assert v[0]["n_rows"] == 3 and v[0]["n_violations"] == 0 and v[0]["passed"]
@@ -54,35 +51,23 @@ def test_speaking_rate_check(spark):
 
 
 def test_runner_speaking_rate_default_bound(spark):
-    """``run_validation`` at the default (0.5, 30) chars/s bound, on rows
-    built by hand (every generated clip is far above it): 12 chars/s
-    passes, 200 and 0.2 chars/s fail, and a NULL transcript or a zero
-    duration is not checkable, so it is no speaking-rate violation."""
-    from baskerville_spark.runtime.runner import ValidationConfig, run_validation
-    from baskerville_spark.schema import CLIP_SCHEMA
-
-    cases = [  # clip_id, dur_ms, transcript
-        ("cps_12", 1000, "x" * 12),
-        ("cps_200", 1000, "x" * 200),
-        ("cps_0.2", 10000, "xx"),
-        ("null_transcript", 1000, None),
-        ("zero_dur", 0, "x" * 12),
+    """``speaking_rate_verdicts`` at its default (0.5, 30) chars/s bound, on
+    rows built by hand (every generated clip is far above it), one partition
+    per case: 12 chars/s passes, 200 and 0.2 chars/s fail, and a NULL
+    transcript or a zero duration is not checkable, so it is neither a row
+    nor a violation."""
+    cases = [  # part_id, dur_ms, transcript
+        (0, 1000, "x" * 12),
+        (1, 1000, "x" * 200),
+        (2, 10000, "xx"),
+        (3, 1000, None),
+        (4, 0, "x" * 12),
     ]
-    clips = spark.createDataFrame(
-        [(cid, None, 16000, dur, "pcm_s16le", tx, 0) for cid, dur, tx in cases],
-        CLIP_SCHEMA,
-    )
-    cfg = ValidationConfig(check_audio=False, check_speaking_rate=True)
-    assert cfg.speaking_rate_bounds == (0.5, 30.0)
-    res = run_validation(spark, clips, cfg=cfg)
-    viol = {
-        r["clip_id"]: r["detail"]
-        for r in res.violations.where("check_name = 'speaking_rate'").collect()
-    }
-    assert viol == {"cps_200": "chars_per_sec=200.0", "cps_0.2": "chars_per_sec=0.2"}
-    (v,) = [r for r in res.verdicts.collect() if r["check_name"] == "speaking_rate"]
-    assert (v["part_id"], v["passed"], v["n_violations"]) == (0, False, 2)
-    res.unpersist()
+    rows = spark.createDataFrame(cases, "part_id int, dur_ms int, transcript string")
+    got = {r["part_id"]: (r["n_rows"], r["n_violations"], r["passed"])
+           for r in speaking_rate_verdicts(rows).collect()}
+    assert got == {0: (1, 0, True), 1: (1, 1, False), 2: (1, 1, False),
+                   3: (0, 0, True), 4: (0, 0, True)}
 
 
 def test_payload_check_on_generated_clips(spark, t1_clips, t1_cfg):
@@ -189,87 +174,6 @@ def test_mixture_sample(spark):
     assert ids == ids2
 
 
-def test_runner_consistency_checks_optin(spark, t1_clips, t1_tref):
-    """With the opt-in flags on, the suite gains payload_bytes and
-    speaking_rate verdict rows whose counts match independent recomputation;
-    with defaults, the verdict grid is unchanged (no new check names)."""
-    from baskerville_spark.runtime.runner import ValidationConfig, run_validation
-
-    res = run_validation(
-        spark, t1_clips, t1_tref,
-        cfg=ValidationConfig(
-            check_payload_bytes=True,
-            check_speaking_rate=True,
-            speaking_rate_bounds=(0.5, 400.0),
-        ),
-    )
-    verd = res.verdicts.collect()
-    names = {r["check_name"] for r in verd}
-    assert {"payload_bytes", "speaking_rate"} <= names
-
-    # independent recomputation of both counts from the raw fixture
-    meta = t1_clips.select(
-        "part_id", "clip_id", "codec", "sr_hz", "dur_ms",
-        F.length("bytes").alias("byte_len"), "transcript",
-    )
-    exp_pb = (
-        meta.where(
-            (F.col("codec") == "pcm_s16le")
-            & F.col("dur_ms").isNotNull()
-            & (
-                F.col("byte_len")
-                != F.floor(
-                    F.col("sr_hz").cast("bigint") * F.col("dur_ms") / F.lit(1000)
-                ) * 2
-            )
-        ).count()
-    )
-    cps = F.length("transcript") / (F.col("dur_ms") / F.lit(1000.0))
-    exp_sr = (
-        meta.where(
-            F.col("dur_ms").isNotNull()
-            & ((cps < 0.5) | (cps > 400.0))
-        ).count()
-    )
-    got_pb = sum(r["n_violations"] for r in verd if r["check_name"] == "payload_bytes")
-    got_sr = sum(r["n_violations"] for r in verd if r["check_name"] == "speaking_rate")
-    assert got_pb == exp_pb and exp_pb > 0
-    assert got_sr == exp_sr and exp_sr > 0
-    res.unpersist()
-
-    # defaults: grid unchanged
-    res0 = run_validation(spark, t1_clips, t1_tref)
-    names0 = {r["check_name"] for r in res0.verdicts.collect()}
-    assert "payload_bytes" not in names0 and "speaking_rate" not in names0
-    res0.unpersist()
-
-
-def test_payload_bytes_decodes_each_clip_once(spark, t1_clips, t1_cfg, monkeypatch):
-    """The invariant and the payload byte check both read the decode pass:
-    it is persisted and filled once, so the SNR kernel runs once per
-    decodable clip (the injected mp3 clips fail before the kernel)."""
-    from baskerville_spark.checks import invariants
-    from baskerville_spark.generator import expected_violation_indices
-    from baskerville_spark.runtime.runner import ValidationConfig, run_validation
-
-    calls = spark.sparkContext.accumulator(0)
-    kernel = invariants._snr_kernel
-
-    def counted(*args):
-        calls.add(1)
-        return kernel(*args)
-
-    monkeypatch.setattr(invariants, "_snr_kernel", counted)
-    res = run_validation(
-        spark, t1_clips, cfg=ValidationConfig(check_payload_bytes=True)
-    )
-    res.violations.collect()
-    res.verdicts.collect()
-    res.unpersist()
-    n_mp3 = len(expected_violation_indices(t1_cfg)["decode_error"])
-    assert calls.value == t1_cfg.n_rows - n_mp3
-
-
 def test_chunk_documents(spark):
     from baskerville_spark.functions.packing import chunk_documents
 
@@ -365,37 +269,6 @@ def test_cosine_topk_batched(spark):
     assert got[(11, 1)] == (2, 1.0)           # scale-invariant
     assert got[(11, 2)][0] == 3
     assert len(out) == 4                      # k=2 per query, 2 queries
-
-
-def test_runner_categorical_mix_optin(spark, t1_clips, t1_cfg, t1_tref):
-    """check_categorical_mix=True adds chi2:codec verdict rows judged on
-    Cramér's V: the drifted last partition (unseen 'mp3' codec) fails,
-    the clean partitions pass, and the metric matches an independent
-    chi2_homogeneity recomputation. Defaults leave the grid unchanged."""
-    from baskerville_spark.checks.drift import chi2_homogeneity
-    from baskerville_spark.runtime.runner import ValidationConfig, run_validation
-
-    res = run_validation(
-        spark, t1_clips, t1_tref,
-        cfg=ValidationConfig(check_categorical_mix=True),
-    )
-    verd = {r["part_id"]: r for r in res.verdicts.collect()
-            if r["check_name"] == "chi2:codec"}
-    assert set(verd) == set(range(t1_cfg.n_parts))
-    drift_part = t1_cfg.n_parts - 1
-    assert not verd[drift_part]["passed"]
-    assert verd[0]["passed"] and verd[1]["passed"]
-    # metric matches the standalone operator
-    exp = {r["part_id"]: r["cramers_v"] for r in
-           chi2_homogeneity(t1_clips, "part_id", "codec").collect()}
-    for p, r in verd.items():
-        assert abs(r["metric_value"] - exp[p]) < 1e-12
-    res.unpersist()
-
-    res0 = run_validation(spark, t1_clips, t1_tref)
-    assert not any(n["check_name"].startswith("chi2:")
-                   for n in res0.verdicts.collect())
-    res0.unpersist()
 
 
 def test_partition_spill_flags_cross_partition_keys_only(spark):

@@ -1,12 +1,13 @@
-"""Every top-level def and class in ``baskerville_spark/`` has a production
-caller.
+"""Every top-level def, class and module constant in ``baskerville_spark/``
+has a production caller.
 
 The roots are the entry points: the CLI (``baskerville_spark/main.py``), the
 gate table and driver API of ``__spark_entry__.py``, ``bench.py``,
 ``scripts/`` and ``perfbench/`` (its tests excluded). A walk over the source
 ASTs starts at each root file's module-level statements, follows every name
-a reached definition's body mentions through the imports of its module, and
-stops at code outside these files. A definition that only ``tests/``
+a reached definition's body loads through the imports of its module, and
+stops at code outside these files. Only loads count: a name that is merely
+assigned, or mentioned in a docstring or comment, reaches nothing. A definition that only ``tests/``
 reaches is either wired into an entry point, with a test there, or deleted
 with its tests.
 
@@ -105,7 +106,7 @@ def _references(stmts):
                 chain = _dotted(node)
                 if chain:
                     yield chain
-            elif isinstance(node, ast.Name):
+            elif isinstance(node, ast.Name) and isinstance(node.ctx, ast.Load):
                 yield [node.id]
 
 
@@ -120,7 +121,8 @@ def _load():
 
 
 def unreached():
-    """Sorted ``(module, name)`` of every package def/class no root reaches."""
+    """Sorted ``(module, name)`` of every package def, class and module-level
+    assignment (dunder names aside) no root reaches."""
     modules = _load()
     seen, loaded = set(), set()
     work = []
@@ -176,7 +178,7 @@ def unreached():
         for name, m in modules.items()
         if name.split(".")[0] == PKG
         for d, stmts in m.defs.items()
-        if any(isinstance(s, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)) for s in stmts)
+        if not (d.startswith("__") and d.endswith("__"))
         and (name, d) not in seen
         and (name, d) not in ALLOWED
     )

@@ -316,81 +316,6 @@ def test_states_fold_across_interrupted_runs(spark, tmp_path):
     assert abs(got["clip_id_distinct_est"] - exp["nd"]) <= 0.1 * exp["nd"]
 
 
-def test_audio_states_fold_and_single_decode(spark, tmp_path):
-    """emit_audio_states: per-partition decode states from two interrupted
-    runs fold to the one-pass state of the whole table; when the invariant
-    check is on, the state rides its decode pass (no second payload scan)."""
-    import pyspark.sql.functions as F
-
-    from baskerville_spark.checks import audio_state as AS
-
-    clips_p, tref_p, man_p, out_p = _paths(tmp_path)
-    write_clips(spark, clips_p, CFG)
-    write_transcript_ref(spark, tref_p, CFG)
-    cfg = ValidationConfig(emit_audio_states=True)  # check_audio default on
-    now = datetime.now(timezone.utc)
-    commit_partition(man_p, 2, 0, 0, now)
-    commit_partition(man_p, 3, 0, 0, now)
-    assert run_resumable(spark, clips_p, man_p, out_p, tref_p, cfg=cfg) == [0, 1]
-    import os
-    for p in (2, 3):
-        os.remove(os.path.join(man_p, f"part-{p:05d}.parquet"))
-    assert run_resumable(spark, clips_p, man_p, out_p, tref_p, cfg=cfg) == [2, 3]
-
-    folded = {
-        r["part_id"]: r
-        for r in AS.merge_decode_states(
-            spark.read.parquet(f"{out_p}/audio_states")
-        ).collect()
-    }
-    direct = {
-        r["part_id"]: r
-        for r in AS.decode_state(spark.read.parquet(clips_p)).collect()
-    }
-    assert set(folded) == set(direct) == {0, 1, 2, 3}
-    for p in direct:
-        for f in ("n_clips", "n_decoded", "n_failed", "total_samples",
-                  "clipped_samples", "sum_abs"):
-            assert folded[p][f] == direct[p][f], (p, f)
-
-
-def _with_empty_payload(spark, tmp_path):
-    """The generated clip table plus one clip whose payload is b''."""
-    import pyspark.sql.functions as F
-
-    src, clips_p = str(tmp_path / "src"), str(tmp_path / "clips_empty")
-    write_clips(spark, src, GenConfig(n_rows=40, n_parts=2))
-    df = spark.read.parquet(src)
-    # pcm_s16le: b"" is a well-formed zero-sample stream (flac would fail
-    # on its magic and hide the disagreement)
-    empty = df.limit(1).withColumns({
-        "clip_id": F.lit("empty_payload"),
-        "bytes": F.lit(b"").cast("binary"),
-        "codec": F.lit("pcm_s16le"),
-    })
-    df.unionByName(empty).write.partitionBy("part_id").parquet(clips_p)
-    return clips_p
-
-
-def test_audio_states_sink_independent_of_check_audio(spark, tmp_path):
-    """The audio_states sink comes from the invariant's decode pass when
-    check_audio is on and from a standalone decode pass when it is off;
-    both count an empty payload as a decode failure, so the sink rows are
-    identical either way."""
-    clips_p = _with_empty_payload(spark, tmp_path)
-    sinks = []
-    for on in (True, False):
-        man_p, out_p = str(tmp_path / f"man_{on}"), str(tmp_path / f"out_{on}")
-        cfg = ValidationConfig(emit_audio_states=True, check_audio=on)
-        assert run_resumable(spark, clips_p, man_p, out_p, cfg=cfg) == [0, 1]
-        sinks.append(sorted(
-            tuple(sorted(r.asDict().items()))
-            for r in spark.read.parquet(f"{out_p}/audio_states").collect()
-        ))
-    assert sinks[0] == sinks[1]
-    assert sum(dict(r)["n_failed"] for r in sinks[0]) >= 1
-
-
 def test_null_part_id_raises_named_error(spark, tmp_path):
     """A NULL part_id lands in __HIVE_DEFAULT_PARTITION__; the resumable
     run names it instead of failing on an int/None sort."""

@@ -56,9 +56,7 @@ def test_ml_prep_semantics(spark):
     index is a dense 0..n-1 permutation ordered by (count desc, label asc),
     and scaled values are finite standardized magnitudes."""
     import math
-    import sys
 
-    sys.path.insert(0, "/root/repo")
     import __spark_entry__ as m
 
     sf = "/root/testdata/sf0.001"
@@ -80,9 +78,6 @@ def test_feature_loop_gate_invariants(spark):
     cache row per user (no loss, no duplication) — the hash-level parity
     vs DuckDB is the driver gate's job; this pins the loop mechanics in
     the pytest suite."""
-    import sys
-
-    sys.path.insert(0, "/root/repo")
     import __spark_entry__ as m
 
     out = m.q62_feature_loop(spark, "/root/testdata/sf0.001").collect()
@@ -94,9 +89,6 @@ def test_feature_loop_gate_invariants(spark):
 def test_sensitive_roundtrip_gate(spark):
     """q63 at t1 scale: every event row must come back from the
     split/stash/merge loop exactly once with its sensitive columns."""
-    import sys
-
-    sys.path.insert(0, "/root/repo")
     import __spark_entry__ as m
 
     out = m.q63_sensitive_roundtrip(spark, "/root/testdata/sf0.001")
@@ -312,12 +304,12 @@ def test_gate_registry_snapshot():
     pinned: oracle_sql() has queries()' keys in the same order, each
     callable is registered under its own name, and no oracle text drifts."""
     import hashlib
-    import sys
     from pathlib import Path
 
-    sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
     import __spark_entry__ as m
 
+    # pythonpath = ["."] in pyproject.toml: the gates of this checkout
+    assert Path(m.__file__).resolve().parent == Path(__file__).resolve().parents[1]
     want = [line.split() for line in _REGISTRY_SNAPSHOT.strip().splitlines()]
     qs, oracles = m.queries(), m.oracle_sql()
     assert list(qs) == [k for k, _ in want]
@@ -349,7 +341,6 @@ def test_planted_audio_gates_match_oracles(spark, tmp_path):
     import duckdb
 
     root = Path(__file__).resolve().parents[1]
-    sys.path.insert(0, str(root))
     import __spark_entry__ as m
 
     saved = list(sys.path)  # check_oracle prepends its own source dir
@@ -375,13 +366,9 @@ def test_planted_audio_gates_match_oracles(spark, tmp_path):
 def test_shared_clip_fixture_keys_on_whole_config(monkeypatch):
     """Configs that differ in any GenConfig field get their own fixture;
     an equal config reuses the generated one."""
-    import sys
-    from pathlib import Path
-
     from baskerville_spark import generator
     from baskerville_spark.generator import GenConfig
 
-    sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
     import __spark_entry__ as m
 
     written = []
