@@ -1453,7 +1453,7 @@ def q38_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the md5-threshold sampler is independent of the vec_id%8 cluster key
     # (the old id%sample_mod filter had to be coprime with it), and the
     # driver-side sample is hard-capped at 256·n_centroids vectors
-    cent = train_ivf_centroids(emb, n_centroids=8, sample_mod=3, seed=42)
+    cent = train_ivf_centroids(emb, n_centroids=8, sample_mod=3)
     qvec = [float(x) for x in emb.where("vec_id = 0").select("embedding").first()[0]]
     top = ivf_topk(emb, qvec, cent, k=10, nprobe=2)
     return top.select(F.col("id").alias("vec_id"), F.round("cosine_sim", 4).alias("cosine_sim"))
@@ -2188,7 +2188,7 @@ def q51_normalized_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         ).alias("norm_text"),
     )
-    groups = exact_duplicates(normed, id_col="doc_id", text_col="norm_text", exemplar_k=8)
+    groups = exact_duplicates(normed, text_col="norm_text", exemplar_k=8)
     return groups.select(
         "text_hash",
         "dup_count",
@@ -3010,11 +3010,9 @@ def q63_sensitive_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     store = StateStore(f"{tmp}/stash")
     b1 = e.where(F.col("event_id") % 2 == 0)
     b2 = e.where(F.col("event_id") % 2 == 1)
-    anon1 = cache_sensitive(b1, store, ["event_id"], sensitive_cols,
-                            now_epoch_s=1_000.0)
+    anon1 = cache_sensitive(b1, store, ["event_id"], sensitive_cols)
     # batch 2 lands in the stash BEFORE batch 1's predictions return
-    anon2 = cache_sensitive(b2, store, ["event_id"], sensitive_cols,
-                            now_epoch_s=1_060.0)
+    anon2 = cache_sensitive(b2, store, ["event_id"], sensitive_cols)
     for anon in (anon1, anon2):
         leaked = set(anon.columns) & set(sensitive_cols)
         if leaked:  # the anonymized leg must never carry sensitive columns
@@ -6174,16 +6172,16 @@ def q120_histogram_drift_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     # batch 0 is the baseline snapshot's state; 1 and 2 arrive later and
     # are folded WITHOUT touching batch-0 rows again.
     st = [
-        SS.histogram_state(
-            d.filter(F.col("doc_id") % 3 == i), ["part_id"], hc
+        SS.stats_state(
+            d.filter(F.col("doc_id") % 3 == i), ["part_id"], [], hist_cols=hc
         )
         for i in range(3)
     ]
     base = st[0].select(
         "part_id", F.col("n_chars_hist").alias("base_hist")
     )
-    cur = SS.merge_histogram_states(
-        st[1].unionByName(st[2]), ["part_id"], hc
+    cur = SS.merge_stats_states(
+        st[1].unionByName(st[2]), ["part_id"], [], hist_cols=hc
     )
     lo, hi = SS.histogram_quantile_bounds(
         F.col("n_chars_hist"), 0.5, _Q120_EDGES

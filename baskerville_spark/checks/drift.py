@@ -32,6 +32,8 @@ PSI_THRESHOLD = 0.2
 KS_THRESHOLD = 0.15
 CRAMERS_V_THRESHOLD = 0.2
 DEFAULT_BINS = 10
+#: most frequent values a categorical baseline keeps (the rest fold into OTHER)
+MAX_CATEGORIES = 32
 
 
 # --------------------------------------------------------------------------
@@ -42,9 +44,10 @@ def capture_baseline(
     df: DataFrame,
     numeric_cols: list[str],
     categorical_cols: list[str],
-    max_categories: int = 32,
 ) -> list[Row]:
-    """Snapshot baseline distributions from (presumed clean) data.
+    """Snapshot baseline distributions from (presumed clean) data: numeric
+    columns as ``DEFAULT_BINS`` quantile bins, categorical columns as their
+    ``MAX_CATEGORIES`` most frequent values.
 
     Returns driver-side rows (BASELINE_SCHEMA); persist with
     ``save_baseline``. The snapshot is tiny by construction, so a driver
@@ -85,7 +88,7 @@ def capture_baseline(
             )
     if categorical_cols:
         # ONE job for every categorical column: melt (col, value) pairs,
-        # count, rank per column with a window, keep top max_categories.
+        # count, rank per column with a window, keep top MAX_CATEGORIES.
         # The per-column groupBy().orderBy().limit().collect() loop this
         # replaces ran one full scan PER column — N scans of a 100 TB table
         # where one suffices (same single-pass lesson as stats_verdicts).
@@ -111,7 +114,7 @@ def capture_baseline(
             melted.groupBy("__name", "__value")
             .agg(F.count(F.lit(1)).alias("cnt"))
             .withColumn("__rn", F.row_number().over(w))
-            .where(F.col("__rn") <= max_categories)
+            .where(F.col("__rn") <= MAX_CATEGORIES)
             .collect()
         )
         by_col: dict[str, list[Row]] = {c: [] for c in categorical_cols}
@@ -209,6 +212,19 @@ def _cdf_at(fracs: Column, i: int) -> Column:
     """CDF prefix sum of the first i buckets (left fold, matching the SQL
     oracles' `b0 + b1 + ...` evaluation order)."""
     return F.aggregate(F.slice(fracs, 1, i), F.lit(0.0), lambda acc, x: acc + x)
+
+
+def _binned_ks(cur_fracs: Column, base_fracs: Column, n_bins: int) -> Column:
+    """Binned two-sample KS between two fraction array columns: max over
+    bin prefixes of |CDF_cur − CDF_base|, each CDF a left-fold prefix sum
+    (``_cdf_at``, the fold order of every drift oracle). PSI's companion:
+    PSI weights tail moves by log-ratio, KS catches bulk CDF shifts PSI's
+    clamping mutes. No EPS clamping (CDFs, not ratios)."""
+    diffs = [
+        F.abs(_cdf_at(cur_fracs, i) - _cdf_at(base_fracs, i))
+        for i in range(1, n_bins + 1)
+    ]
+    return F.greatest(*diffs) if len(diffs) > 1 else diffs[0]
 
 
 def _psi_ks_from_fracs(cur_fracs: Column, base_fracs: list[float]) -> tuple[Column, Column]:
@@ -405,18 +421,12 @@ def rolling_ks_verdicts(
     value_col: str,
     bin_edges: list[float],
 ) -> DataFrame:
-    """Window-over-window binned two-sample KS: max over bucket prefix sums
-    of |CDF_w − CDF_{w−1}| — PSI's companion (PSI weights tail moves by
-    log-ratio, KS catches bulk CDF shifts PSI's clamping mutes). Same
-    single-aggregate + |windows|-row self-join plan as rolling PSI; no
-    EPS clamping (CDFs, not ratios). Judged at ``KS_THRESHOLD``."""
+    """Window-over-window binned two-sample KS (``_binned_ks``) of each
+    time window against the previous one. Same single-aggregate +
+    |windows|-row self-join plan as rolling PSI. Judged at
+    ``KS_THRESHOLD``."""
     j, cur_fracs, prv_fracs = _rolling_pairs(df, window_col, value_col, bin_edges)
-    nb = len(list(bin_edges)) - 1
-    diffs = [
-        F.abs(_cdf_at(cur_fracs, i) - _cdf_at(prv_fracs, i))
-        for i in range(1, nb + 1)
-    ]
-    ks = F.greatest(*diffs) if len(diffs) > 1 else diffs[0]
+    ks = _binned_ks(cur_fracs, prv_fracs, len(list(bin_edges)) - 1)
     return _rolling_select(j, ks, "ks", KS_THRESHOLD)
 
 
@@ -462,7 +472,6 @@ def rolling_chi2_verdicts(
 def psi_attribution(
     df: DataFrame,
     baseline_rows: list[Row],
-    top_k: int | None = None,
 ) -> DataFrame:
     """Per-bin PSI contribution rows — the explanation attached to a
     psi:<col> verdict: which bins moved, by how much, and what share of
@@ -480,9 +489,7 @@ def psi_attribution(
     Plan shape: the SAME one-scan/one-shuffle wide aggregate as
     ``drift_verdicts`` (all (column, bucket) conditional sums in one
     ``groupBy(part).agg``); bins explode from the wide result, so
-    attribution costs nothing beyond the verdicts it explains. ``top_k``
-    adds one window over the narrow attribution rows (|parts|·|bins| of
-    them — never data-sized).
+    attribution costs nothing beyond the verdicts it explains.
 
     When total PSI < EPS (no drift — nothing to attribute), the share
     denominator is EPS-guarded, so shares are ≈0 rather than 0/0; they sum
@@ -519,21 +526,9 @@ def psi_attribution(
                     (t / total).cast("double").alias("share"),
                 )
             )
-    out = wide.select(
+    return wide.select(
         "part_id", F.explode(F.array(*structs)).alias("__a")
     ).select("part_id", "__a.*")
-    if top_k is not None:
-        from pyspark.sql import Window
-
-        w = Window.partitionBy("part_id", "check_name").orderBy(
-            F.desc("contribution"), F.asc("bin_idx")
-        )
-        out = (
-            out.withColumn("rk", F.row_number().over(w))
-            .where(F.col("rk") <= top_k)
-            .drop("rk")
-        )
-    return out
 
 
 # --------------------------------------------------------------------------
@@ -544,13 +539,12 @@ def chi2_homogeneity(
     df: DataFrame,
     group_col: str,
     cat_col: str,
-    threshold: float | None = None,
 ) -> DataFrame:
     """Per-group chi-squared homogeneity test: does group g's categorical
     mix differ from the REST of the table (a proper two-sample 2xK
     contingency test, not group-vs-whole, which double-counts the group)?
 
-    Output per group: ``(group, chi2, dof, n_group, n_rest[, passed])`` —
+    Output per group: ``(group, chi2, dof, n_group, n_rest, cramers_v)`` —
     chi2 = sum over the 2xK cells of (O-E)^2/E with E = row_total *
     col_total / N; dof = K-1. Groups with an empty complement emit NULL
     chi2 (the test is undefined, not "passed").
@@ -608,7 +602,7 @@ def chi2_homogeneity(
         (F.col("n_group") > 0) & (n_rest > 0),
         (F.col("o") - e_g) ** 2 / e_g + (o_r - e_r) ** 2 / e_r,
     )
-    out = full.groupBy("g", "n_group", "n_all").agg(
+    return full.groupBy("g", "n_group", "n_all").agg(
         F.sum(term).alias("chi2"),
         (F.count(F.lit(1)) - F.lit(1)).cast("int").alias("dof"),
     ).select(
@@ -624,9 +618,6 @@ def chi2_homogeneity(
             F.col("dof") > 0, F.sqrt(F.col("chi2") / F.col("n_all"))
         ).alias("cramers_v"),
     )
-    if threshold is not None:
-        out = out.withColumn("passed", F.col("chi2") <= F.lit(float(threshold)))
-    return out
 
 
 def _prefix_counts(vtot: DataFrame) -> DataFrame:

@@ -41,16 +41,13 @@ def detect_metric_anomalies(
     k_sigma: float = 3.0,
     rel_change_max: float = 0.5,
     min_history: int = 3,
-    lookback: int | None = None,
-    current_run_id: int | None = None,
 ) -> DataFrame:
     """Flag metric values that break from their own trailing history.
 
     For every (part_id, column_name, metric_name) series ordered by run_id,
-    each row is compared against the runs STRICTLY BEFORE it (``rowsBetween``
-    ending at -1 — the current value never contaminates its own baseline;
-    ``lookback=N`` bounds the frame to the last N runs, the reference's
-    fixed trailing window, else all prior runs):
+    each row is compared against ALL the runs STRICTLY BEFORE it
+    (``rowsBetween`` ending at -1 — the current value never contaminates its
+    own baseline):
 
     - **k-sigma band** (the reference's incident rule):
       ``|value - trailing_mean| > k_sigma * max(trailing_stddev, floor)``
@@ -63,17 +60,15 @@ def detect_metric_anomalies(
     prior runs exist (fewer ⇒ ``anomaly`` is false and trailing columns are
     still reported, so callers can audit warm-up runs).  Returns the history
     columns plus ``trailing_n, trailing_mean, trailing_stddev, z_score,
-    rel_change, anomaly``; ``current_run_id`` filters the output to one
-    run's report without changing any computation.
+    rel_change, anomaly``.
 
     One shuffle total (window partition key), rows are O(metrics), never
     O(data).
     """
-    lo = Window.unboundedPreceding if lookback is None else -int(lookback)
     w = (
         Window.partitionBy("part_id", "column_name", "metric_name")
         .orderBy("run_id")
-        .rowsBetween(lo, -1)
+        .rowsBetween(Window.unboundedPreceding, -1)
     )
     v = F.col("metric_value")
     mean = F.avg(v).over(w)
@@ -85,7 +80,7 @@ def detect_metric_anomalies(
     mean_eff = F.greatest(F.abs(mean), F.lit(STDDEV_FLOOR))
     z = (v - mean) / std_eff
     rel = (v - mean) / mean_eff
-    out = history.select(
+    return history.select(
         "*",
         n.alias("trailing_n"),
         mean.alias("trailing_mean"),
@@ -98,6 +93,3 @@ def detect_metric_anomalies(
                | (F.abs(v - mean) > float(rel_change_max) * mean_eff))
         ).alias("anomaly"),
     )
-    if current_run_id is not None:
-        out = out.where(F.col("run_id") == int(current_run_id))
-    return out

@@ -10,9 +10,9 @@ JVM-side built-ins:
 - approx_distinct             → hll_sketch_estimate(hll_sketch_agg) — a
   DataSketches HLL, the scale-safe replacement of the reference's exact
   F.countDistinct (features/feature_unique_ua_total.py:28); the north rule
-  mandates HLL at 10^12. ``rsd`` maps to the sketch size as
-  lg_k = ceil(2·log2(1.04/rsd)) clamped to [4, 21] (12 at rsd 0.02). It is
-  the sketch stats_state keeps, so equal lg_k gives identical estimates.
+  mandates HLL at 10^12. ``HLL_LG_K`` = 12 holds the relative error
+  1.04/sqrt(2^12) under 0.02. It is the sketch stats_state keeps, so equal
+  lg_k gives identical estimates.
 - quantiles                   → percentile_approx (KLL-style sketch)
 
 Why not ``approx_count_distinct``: Spark's HLL++ keeps its registers as
@@ -42,9 +42,11 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from baskerville_spark.checks import sqltext
-from baskerville_spark.checks.stats_state import lg_k_for_rsd, sketchable_sql
+from baskerville_spark.checks.stats_state import sketchable_sql
 
 DEFAULT_QUANTILES = [0.01, 0.05, 0.25, 0.5, 0.75, 0.95, 0.99]
+#: HLL sketch size of ``approx_distinct`` (relative error under 0.02)
+HLL_LG_K = 12
 
 
 def _stat(col: str, stat: str) -> str:
@@ -52,9 +54,7 @@ def _stat(col: str, stat: str) -> str:
     return sqltext.ident(f"{col}__{stat}")
 
 
-def _aggs_for(
-    df: DataFrame, col: str, numeric: bool, lg_k: int
-) -> list[str]:
+def _aggs_for(df: DataFrame, col: str, numeric: bool) -> list[str]:
     """One column's aggregates as SQL text (see ``sqltext``: the JVM parses
     each in one call, where the Column-algebra form cost ~40 py4j round
     trips per column)."""
@@ -63,7 +63,7 @@ def _aggs_for(
     aggs = [
         f"count({c}) AS {out('count')}",
         f"sum(CAST(isnull({c}) AS BIGINT)) AS {out('null_count')}",
-        f"hll_sketch_estimate(hll_sketch_agg({sketchable_sql(df, col)}, {lg_k}))"
+        f"hll_sketch_estimate(hll_sketch_agg({sketchable_sql(df, col)}, {HLL_LG_K}))"
         f" AS {out('approx_distinct')}",
     ]
     if numeric:
@@ -80,11 +80,12 @@ def _aggs_for(
 def column_stats(
     df: DataFrame,
     part_col: str | None = "part_id",
-    numeric_cols: list[str] | None = None,
-    other_cols: list[str] | None = None,
-    rsd: float = 0.02,
+    *,
+    numeric_cols: list[str],
+    other_cols: list[str],
 ) -> DataFrame:
-    """Long-format per-(partition, column) stats: one shuffle total.
+    """Long-format per-(partition, column) stats of ``numeric_cols`` and
+    ``other_cols``: one shuffle total.
 
     Returns columns: part_id, column_name, count, null_count, min, max,
     approx_distinct, quantiles (array<double> at ``DEFAULT_QUANTILES``,
@@ -94,23 +95,11 @@ def column_stats(
     if part_col is None:
         df = df.withColumn("__whole_table", F.lit(0))
         part_col = "__whole_table"
-    if numeric_cols is None or other_cols is None:
-        numeric_types = {"int", "bigint", "smallint", "tinyint", "double", "float", "decimal"}
-        inferred_num, inferred_other = [], []
-        for name, dtype in df.dtypes:
-            if name == part_col:
-                continue
-            base = dtype.split("(")[0]
-            (inferred_num if base in numeric_types else inferred_other).append(name)
-        numeric_cols = numeric_cols if numeric_cols is not None else inferred_num
-        other_cols = other_cols if other_cols is not None else inferred_other
-
-    lg_k = lg_k_for_rsd(rsd)
     aggs: list[str] = []
     for c in numeric_cols:
-        aggs += _aggs_for(df, c, True, lg_k)
+        aggs += _aggs_for(df, c, True)
     for c in other_cols:
-        aggs += _aggs_for(df, c, False, lg_k)
+        aggs += _aggs_for(df, c, False)
 
     wide = df.groupBy(F.col(part_col).alias("part_id")).agg(*map(F.expr, aggs))
 

@@ -23,12 +23,11 @@ Caveats stated where they bite: double-typed sums are floating-point and
 order-dependent, so cross-run equality is only exact for integral columns
 (the gate and tests use bigint); estimates come from sketches and must be
 consumed through verdicts with margins >> rsd (1.04/sqrt(2^lg_k); 0.81% at
-the default lg_k=14), the same discipline as checks/suite.approx_distinct.
+``DEFAULT_LG_K`` = 14), the same discipline as checks/suite.approx_distinct.
 """
 
 from __future__ import annotations
 
-import math
 from typing import Mapping, Optional, Sequence
 
 from pyspark.sql import Column, DataFrame
@@ -41,25 +40,16 @@ from baskerville_spark.checks.drift import bucket_counts
 __all__ = [
     "sketchable",
     "sketchable_sql",
-    "lg_k_for_rsd",
     "stats_state",
     "merge_stats_states",
     "finalize_stats",
-    "histogram_state",
-    "merge_histogram_states",
     "histogram_quantile_bounds",
     "histogram_psi",
     "histogram_ks",
 ]
 
+#: HLL sketch size of every state table: relative error 1.04/sqrt(2^14)
 DEFAULT_LG_K = 14
-
-
-def lg_k_for_rsd(rsd: float) -> int:
-    """Sketch size for a target relative standard deviation: HLL error is
-    1.04/sqrt(2^lg_k), so lg_k = ceil(2·log2(1.04/rsd)), clamped to the
-    [4, 21] range ``hll_sketch_agg`` accepts (12 at rsd 0.02)."""
-    return max(4, min(21, math.ceil(2 * math.log2(1.04 / rsd))))
 
 
 def sketchable_sql(df: DataFrame, name: str) -> str:
@@ -97,16 +87,16 @@ def stats_state(
     group_by: Sequence[str],
     numeric_cols: Sequence[str],
     distinct_cols: Sequence[str] = (),
-    lg_k: int = DEFAULT_LG_K,
     hist_cols: Optional[Mapping[str, Sequence[float]]] = None,
 ) -> DataFrame:
     """One pass over ``df`` -> one mergeable state row per group.
 
     Columns: n_rows, then per numeric col ``{c}_n/_nulls/_min/_max/_sum``
     (sum keeps the input's integral/floating class), per distinct col
-    ``{c}_hll`` (binary sketch), per hist col ``{c}_hist`` (exact bin
-    counts — see histogram_state). All partials combine map-side; the
-    exchange carries one row per (group × task).
+    ``{c}_hll`` (binary sketch at ``DEFAULT_LG_K``), per hist col
+    ``{c}_hist`` (exact bin counts, every bin a conditional SUM — see the
+    histogram section below). All partials combine map-side; the exchange
+    carries one row per (group × task).
     """
     aggs = [F.count(F.lit(1)).alias("n_rows")]
     for c in numeric_cols:
@@ -119,7 +109,7 @@ def stats_state(
             F.sum(col).alias(f"{c}_sum"),
         ]
     for c in distinct_cols:
-        aggs.append(F.hll_sketch_agg(sketchable(df, c), lg_k).alias(f"{c}_hll"))
+        aggs.append(F.hll_sketch_agg(sketchable(df, c), DEFAULT_LG_K).alias(f"{c}_hll"))
     for c, edges in (hist_cols or {}).items():
         aggs.append(_hist_counts(c, edges).alias(f"{c}_hist"))
     return df.groupBy(*group_by).agg(*aggs)
@@ -136,7 +126,10 @@ def merge_stats_states(
     of batches unioned together) into one state row per group. Merging is
     exact for counts/min/max/integral sums and register-max for sketches —
     ``merge(state(A), state(B)) == state(A ∪ B)`` field-for-field when A
-    and B are disjoint batches (asserted in tests/test_checks.py)."""
+    and B are disjoint batches (asserted in tests/test_checks.py); for
+    histograms BIT-EXACTLY: collect_list order is nondeterministic but long
+    addition is order-free, and the list is bounded by the number of
+    ingest batches per group (state rows, not data rows)."""
     aggs = [F.sum("n_rows").alias("n_rows")]
     for c in numeric_cols:
         aggs += [
@@ -201,41 +194,6 @@ def _hist_merge(hist_col: str, nb: int) -> Column:
     ).alias(hist_col)
 
 
-def histogram_state(
-    df: DataFrame,
-    group_by: Sequence[str],
-    hist_cols: Mapping[str, Sequence[float]],
-) -> DataFrame:
-    """One pass -> one state row per group with ``{c}_hist`` bin counts.
-    Every bin is a conditional SUM in the same single groupBy, so partials
-    combine map-side and the exchange carries one state row per
-    (group × task)."""
-    aggs = [F.count(F.lit(1)).alias("n_rows")]
-    aggs += [
-        _hist_counts(c, edges).alias(f"{c}_hist")
-        for c, edges in hist_cols.items()
-    ]
-    return df.groupBy(*group_by).agg(*aggs)
-
-
-def merge_histogram_states(
-    states: DataFrame,
-    group_by: Sequence[str],
-    hist_cols: Mapping[str, Sequence[float]],
-) -> DataFrame:
-    """Fold histogram state rows: element-wise long sum per bin —
-    ``merge(state(A), state(B)) == state(A ∪ B)`` BIT-EXACTLY for disjoint
-    batches. collect_list order is nondeterministic but long addition is
-    order-free, so the fold is deterministic; the list is bounded by the
-    number of ingest batches per group (state rows, not data rows)."""
-    aggs = [F.sum("n_rows").alias("n_rows")]
-    aggs += [
-        _hist_merge(f"{c}_hist", len(edges) + 1)
-        for c, edges in hist_cols.items()
-    ]
-    return states.groupBy(*group_by).agg(*aggs)
-
-
 def _prefix_ge(counts: Column, target: Column) -> Column:
     """Smallest 1-based index whose left-fold prefix sum reaches ``target``
     (NULL if the whole array sums below it)."""
@@ -283,19 +241,12 @@ def _count_fracs(counts: Column) -> Column:
 def histogram_ks(
     cur_counts: Column, base_counts: Column, n_bins: int
 ) -> Column:
-    """Binned two-sample KS between two histogram states: max over bin
-    prefixes of |CDF_cur − CDF_base|, each CDF a left-fold prefix sum
-    (checks/drift._cdf_at — the same fold order as every drift oracle).
-    PSI's companion from the SAME state rows: PSI weights tail moves by
-    log-ratio, KS catches bulk CDF shifts PSI's clamping mutes."""
-    from baskerville_spark.checks.drift import _cdf_at
+    """Binned two-sample KS between two histogram states
+    (checks/drift._binned_ks over their count fractions) — PSI's companion
+    from the SAME state rows."""
+    from baskerville_spark.checks.drift import _binned_ks
 
-    cur, base = _count_fracs(cur_counts), _count_fracs(base_counts)
-    diffs = [
-        F.abs(_cdf_at(cur, i) - _cdf_at(base, i))
-        for i in range(1, n_bins + 1)
-    ]
-    return F.greatest(*diffs) if len(diffs) > 1 else diffs[0]
+    return _binned_ks(_count_fracs(cur_counts), _count_fracs(base_counts), n_bins)
 
 
 def histogram_psi(cur_counts: Column, base_counts: Column) -> Column:

@@ -42,7 +42,7 @@ violate), matching SQL DISTINCT semantics in both engines.
 
 from __future__ import annotations
 
-from typing import Optional, Sequence
+from typing import Sequence
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -77,7 +77,6 @@ def _round6(v: float, edge: float, up: bool) -> float:
 
 def suggest_constraints(
     df: DataFrame,
-    columns: Optional[Sequence[str]] = None,
     max_members: int = 20,
     low_null_max: float = 0.05,
     pad: float = 1.25,
@@ -101,8 +100,7 @@ def suggest_constraints(
     sorted by (col_name, kind). lo/hi are NULL except for bounds; members
     is NULL except for membership.
     """
-    cols = list(columns) if columns is not None else list(df.columns)
-    df = df.select(*cols)
+    cols = list(df.columns)
     dtypes = {f.name: f.dataType for f in df.schema.fields}
 
     aggs = [F.count(F.lit(1)).alias("__n")]

@@ -599,15 +599,14 @@ BALANCE_SCHEMA = T.StructType(
 )
 
 
-def audio_channel_balance(clips: DataFrame, n_channels: int = 2) -> DataFrame:
-    """Stereo QA over interleaved multi-channel payloads: per-clip L/R RMS
+def audio_channel_balance(clips: DataFrame) -> DataFrame:
+    """Stereo QA over interleaved two-channel payloads: per-clip L/R RMS
     (dBFS), ``balance_db`` (= rms_l_dbfs − rms_r_dbfs) and ``corr_lr``
-    (Pearson correlation of the first two channels). The stereo-ingest
+    (Pearson correlation of the two channels). The stereo-ingest
     failure screen mono stats can't see: a dead/near-dead channel
     (balance_db blows up, rms NULL when silent), a polarity flip
     (corr ≈ −1), and fake stereo (mono duplicated into both channels,
-    corr ≈ +1 with balance ≈ 0). Channels beyond the first two are
-    ignored for the pair metrics; a trailing partial frame is truncated
+    corr ≈ +1 with balance ≈ 0). A trailing partial frame is truncated
     (same tolerant-reader rule as audio_downmix); clips shorter than one
     frame report ``decode_ok`` False. Silent channels emit NULL dBFS
     (never −inf); zero-variance channels emit NULL corr (the statistic is
@@ -618,18 +617,12 @@ def audio_channel_balance(clips: DataFrame, n_channels: int = 2) -> DataFrame:
     gated analytically (q134: ±square-wave channel pairs whose RMS,
     balance and correlation are exact closed forms).
     """
-    if n_channels < 2:
-        # fail at call time, not as an opaque IndexError inside the Arrow
-        # worker on the first decodable clip (x[:, 1] needs two channels)
-        raise ValueError(
-            f"audio_channel_balance needs n_channels >= 2, got {n_channels}"
-        )
 
     def _bal(pcm: np.ndarray) -> tuple | None:
-        if len(pcm) < n_channels:
+        if len(pcm) < 2:
             return None
-        nf = len(pcm) // n_channels
-        x = pcm[: nf * n_channels].astype(np.float64).reshape(nf, n_channels)
+        nf = len(pcm) // 2
+        x = pcm[: nf * 2].astype(np.float64).reshape(nf, 2)
         left, right = x[:, 0], x[:, 1]
         db_l = _dbfs(float(np.sqrt((left * left).mean())))
         db_r = _dbfs(float(np.sqrt((right * right).mean())))

@@ -36,11 +36,11 @@ from baskerville_spark.functions.graph import _Ckpt
 MERGES_SCHEMA = "merge_rank int, lsym string, rsym string, pair_count long"
 
 
-def word_frequencies(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def word_frequencies(docs: DataFrame) -> DataFrame:
     """(sym: array<string> of characters, cnt) per distinct whitespace word."""
     return (
         docs.select(
-            F.explode(F.split(F.col(text_col), r"\s+")).alias("w")
+            F.explode(F.split(F.col("text"), r"\s+")).alias("w")
         )
         .where(F.length("w") > 0)
         .groupBy("w")
@@ -80,7 +80,6 @@ def _apply_merge(words: DataFrame, l: str, r: str) -> DataFrame:
 def train_bpe_merges(
     docs: DataFrame,
     n_merges: int,
-    text_col: str = "text",
     min_freq: int = 2,
 ) -> DataFrame:
     """Learn the top ``n_merges`` BPE merges; returns (merge_rank, lsym,
@@ -88,7 +87,7 @@ def train_bpe_merges(
     lexicographic on ties."""
     spark = docs.sparkSession
     ckpt = _Ckpt()
-    words = ckpt(word_frequencies(docs, text_col))
+    words = ckpt(word_frequencies(docs))
     merges: list[tuple[int, str, str, int]] = []
     pending = False
     for rank in range(1, n_merges + 1):
@@ -122,12 +121,7 @@ def train_bpe_merges(
     return spark.createDataFrame(merges, MERGES_SCHEMA)
 
 
-def apply_bpe(
-    docs: DataFrame,
-    merges: DataFrame,
-    text_col: str = "text",
-    out_col: str = "bpe_tokens",
-) -> DataFrame:
+def apply_bpe(docs: DataFrame, merges: DataFrame) -> DataFrame:
     """Tokenize with a trained merge table (the inference side of
     :func:`train_bpe_merges`; functions/text.py's token_count_bpe is the
     regex APPROXIMATION — this is the real thing).
@@ -137,8 +131,9 @@ def apply_bpe(
     Arrow-batched pandas UDF that applies merges per word in rank order —
     the standard tokenizer hot loop, genuinely per-row compute (like
     decode), so the one sanctioned Python path. Word-level results are
-    memoized per batch (Zipf makes the hit rate high). Appends ``out_col``
-    (array<string>); whitespace splitting mirrors word_frequencies.
+    memoized per batch (Zipf makes the hit rate high). Appends
+    ``bpe_tokens`` (array<string>) tokenizing the ``text`` column;
+    whitespace splitting mirrors word_frequencies.
     """
     ranked = [
         (r["lsym"], r["rsym"])
@@ -152,7 +147,7 @@ def apply_bpe(
 
     out_schema = T.StructType(
         docs_schema.fields
-        + [T.StructField(out_col, T.ArrayType(T.StringType()), True)]
+        + [T.StructField("bpe_tokens", T.ArrayType(T.StringType()), True)]
     )
 
     def _tok(batches):
@@ -181,9 +176,9 @@ def apply_bpe(
                 None
                 if t is None
                 else [s for w in t.split() for s in word_tokens(w)]
-                for t in pdf[text_col]
+                for t in pdf["text"]
             ]
-            pdf[out_col] = toks
+            pdf["bpe_tokens"] = toks
             yield pdf
 
     return docs.mapInPandas(_tok, schema=out_schema)

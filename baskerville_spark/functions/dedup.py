@@ -1,11 +1,11 @@
 """Deduplication operators: exact, n-gram Jaccard, MinHash+LSH, SimHash.
+They read a ``doc_id`` and a ``text`` column.
 
 Scale design notes (the whole point of these over naive pairwise):
 - **exact**: hash-groupBy on md5(text) — never shuffles the text itself,
-  only (hash, id). Exemplar ids are bounded via a row_number window (an
-  external, spillable sort) instead of collect_list, so a pathological
-  text duplicated 10^9 times never materializes a 10^9-element array on
-  one reducer.
+  only (hash, id). Exemplar ids are bounded by a salted three-level
+  collect_list, so a pathological text duplicated 10^9 times never
+  materializes a 10^9-element array on one reducer.
 - **n-gram Jaccard**: inverted-index self-join on shingles. The classic
   quadratic blowup is bounded by dropping shingles with document frequency
   > max_df (a stop-shingle filter) — standard trick; without it one common
@@ -30,16 +30,16 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-
-def _tokens(text_col: str):
-    return F.split(F.lower(F.col(text_col)), r"\s+")
+from baskerville_spark.checks.uniqueness import salted_exemplars
 
 
-def word_shingles(
-    df: DataFrame, id_col: str = "doc_id", text_col: str = "text", n: int = 5
-) -> DataFrame:
-    """Distinct word n-gram shingles per document: (id, shingle)."""
-    toks = _tokens(text_col)
+def _tokens():
+    return F.split(F.lower(F.col("text")), r"\s+")
+
+
+def word_shingles(df: DataFrame, n: int = 5) -> DataFrame:
+    """Distinct word n-gram shingles per ``doc_id``: (id, shingle)."""
+    toks = _tokens()
     k = F.size(toks) - (n - 1)
     sh = F.transform(
         F.sequence(F.lit(0), F.greatest(k - 1, F.lit(0))),
@@ -47,35 +47,21 @@ def word_shingles(
     )
     return (
         df.where(F.size(toks) >= n)
-        .select(F.col(id_col).alias("id"), F.explode(F.array_distinct(sh)).alias("shingle"))
+        .select(F.col("doc_id").alias("id"), F.explode(F.array_distinct(sh)).alias("shingle"))
     )
 
 
 def exact_duplicates(
     df: DataFrame,
-    id_col: str = "doc_id",
     text_col: str = "text",
     exemplar_k: int = 16,
-    n_salt: int = 64,
 ) -> DataFrame:
     """Groups of byte-identical texts: (text_hash, dup_count, ids).
 
-    ``ids`` holds at most ``exemplar_k`` exemplar ids (the smallest by sort
-    order). Salted THREE-level aggregation (same structure and bound
-    analysis as checks.uniqueness.duplicate_exemplars — see its docstring):
-    level 0 round-robin-repartitions the (already count-filtered) rows and
-    groups on (hash, spark_partition_id()) so each group is fully reduced
-    map-side within one partition (buffer ≤ partition rows) and truncated
-    to k BEFORE any cross-partition merge; level 1 merges ≤ P/n_salt
-    truncated lists per (hash, pid % n_salt); level 2 merges ≤ n_salt lists.
-    No single buffer ever holds more than max(split_rows, (P/n_salt)·k,
-    n_salt·k) ids for any hot hash — unlike a two-level (hash, salt) form,
-    whose reduce side still concatenates ~dup_count/n_salt ids before the
-    slice, or the row_number-window form, which serializes a hot hash onto
-    one reducer's external sort. Never ships text — only (hash, id).
-
-    "Smallest k" is preserved exactly: every level contributes its own k
-    smallest, and the global k smallest are a subset of that union.
+    ``ids`` holds at most ``exemplar_k`` exemplar ``doc_id``s (the smallest
+    by sort order), aggregated by ``checks.uniqueness.salted_exemplars``
+    (three bounded levels, 64 salts; see its docstring for the buffer
+    bound). Never ships text — only (hash, id).
 
     COUNT-FIRST pre-filter: an algebraic count per hash (map-side combined,
     skew-immune) finds the duplicated hashes, and a left_semi join restricts
@@ -89,48 +75,16 @@ def exact_duplicates(
     NULL texts never form a duplicate group (the semi join's equality drops
     them) — a null payload is a schema-check concern, not a dedup one.
     """
-    hashed = df.select(F.md5(F.col(text_col)).alias("text_hash"), F.col(id_col).alias("id"))
+    hashed = df.select(F.md5(F.col(text_col)).alias("text_hash"), F.col("doc_id").alias("id"))
     dup_hashes = (
         hashed.groupBy("text_hash")
         .agg(F.count(F.lit(1)).alias("__c"))
         .where("__c > 1")
         .select("text_hash")
     )
-    # Round-robin repartition is LOAD-BEARING: a sort-merge semi join
-    # clusters rows BY HASH, making spark_partition_id() constant per hash
-    # and collapsing level 0 into one dup_count-sized buffer; round-robin
-    # restores partition-local groups under any join strategy (round-4
-    # review catch; same fix in checks/uniqueness.duplicate_exemplars).
-    hashed = hashed.join(dup_hashes, "text_hash", "left_semi").repartition(
-        df.sparkSession.sparkContext.defaultParallelism
-    )
-    phase0 = (
-        hashed.withColumn("__pid", F.spark_partition_id())
-        .groupBy("text_hash", "__pid")
-        .agg(
-            F.slice(F.sort_array(F.collect_list("id")), 1, exemplar_k).alias("partial_ids"),
-            F.count(F.lit(1)).alias("partial_count"),
-        )
-    )
-    phase1 = (
-        phase0.withColumn("__salt", F.col("__pid") % n_salt)
-        .groupBy("text_hash", "__salt")
-        .agg(
-            F.slice(
-                F.sort_array(F.flatten(F.collect_list("partial_ids"))), 1, exemplar_k
-            ).alias("partial_ids"),
-            F.sum("partial_count").alias("partial_count"),
-        )
-    )
-    return (
-        phase1.groupBy("text_hash")
-        .agg(
-            F.sum("partial_count").alias("dup_count"),
-            F.slice(
-                F.sort_array(F.flatten(F.collect_list("partial_ids"))), 1, exemplar_k
-            ).alias("ids"),
-        )
-        .where(F.col("dup_count") > 1)
+    hashed = hashed.join(dup_hashes, "text_hash", "left_semi")
+    return salted_exemplars(hashed, "text_hash", "id", exemplar_k, 64).withColumnRenamed(
+        "exemplar_ids", "ids"
     )
 
 
@@ -182,8 +136,6 @@ def _jaccard_pairs_over(sh: DataFrame, threshold: float, candidates: DataFrame |
 
 def ngram_jaccard_pairs(
     df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     n: int = 5,
     threshold: float = 0.5,
     max_df: int = 1000,
@@ -196,7 +148,7 @@ def ngram_jaccard_pairs(
     blowup at corpus scale); the metric is Jaccard over the filtered
     shingle space — identical to true Jaccard when nothing is filtered.
     """
-    sh = word_shingles(df, id_col, text_col, n)
+    sh = word_shingles(df, n)
     low_df = (
         sh.groupBy("shingle")
         .agg(F.count(F.lit(1)).alias("df_"))
@@ -207,15 +159,9 @@ def ngram_jaccard_pairs(
     return _jaccard_pairs_over(filtered, threshold, candidates=None)
 
 
-def minhash_signatures(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n: int = 5,
-    num_hashes: int = 32,
-) -> DataFrame:
+def minhash_signatures(df: DataFrame, n: int = 5, num_hashes: int = 32) -> DataFrame:
     """(id, sig: array<bigint>) MinHash signature — one groupBy, xxhash64-based."""
-    sh = word_shingles(df, id_col, text_col, n)
+    sh = word_shingles(df, n)
     mins = [
         F.min(F.xxhash64(F.lit(i), F.col("shingle"))).alias(f"h{i}")
         for i in range(num_hashes)
@@ -228,8 +174,6 @@ def minhash_signatures(
 
 def minhash_lsh_pairs(
     df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     n: int = 5,
     num_hashes: int = 32,
     bands: int = 8,
@@ -241,7 +185,7 @@ def minhash_lsh_pairs(
     verify pair join, so the exact pass costs O(candidate docs), never the
     full-corpus quadratic join."""
     rows_per_band = num_hashes // bands
-    sigs = minhash_signatures(df, id_col, text_col, n, num_hashes)
+    sigs = minhash_signatures(df, n, num_hashes)
     banded = sigs.select(
         "id",
         F.explode(
@@ -268,7 +212,7 @@ def minhash_lsh_pairs(
     )
     if verify_threshold is None:
         return cand
-    sh = word_shingles(df, id_col, text_col, n)
+    sh = word_shingles(df, n)
     return _jaccard_pairs_over(sh, verify_threshold, candidates=cand)
 
 
@@ -290,12 +234,7 @@ def _token_hash(col, hasher: str):
     raise ValueError(f"unknown hasher {hasher!r} (use 'xxhash64' or 'md5')")
 
 
-def simhash(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    hasher: str = "xxhash64",
-) -> DataFrame:
+def simhash(df: DataFrame, hasher: str = "xxhash64") -> DataFrame:
     """(id, simhash: bigint, chunks: array<int>) SimHash over tokens —
     64-bit for the xxhash64 hasher, 60-bit for the SQL-portable md5 hasher.
 
@@ -304,7 +243,7 @@ def simhash(
     """
     hcol, n_bits = _token_hash(F.col("tok"), hasher)
     tok = (
-        df.select(F.col(id_col).alias("id"), F.explode(_tokens(text_col)).alias("tok"))
+        df.select(F.col("doc_id").alias("id"), F.explode(_tokens()).alias("tok"))
         .where(F.col("tok") != "")
         .select("id", hcol.alias("h"))
     )
@@ -333,8 +272,6 @@ def simhash(
 
 def simhash_near_dups(
     df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     max_hamming: int = 3,
     hasher: str = "xxhash64",
 ) -> DataFrame:
@@ -348,7 +285,7 @@ def simhash_near_dups(
     """
     if max_hamming >= 4:
         raise ValueError("4-chunk banding is only lossless for max_hamming <= 3")
-    s = simhash(df, id_col, text_col, hasher=hasher)
+    s = simhash(df, hasher=hasher)
     exploded = s.select(
         "id", "simhash", F.posexplode("chunks").alias("band", "chunk")
     )
@@ -375,8 +312,6 @@ def simhash_near_dups(
 
 def tfidf_cosine_pairs(
     df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     threshold: float = 0.3,
     max_df: int = 1000,
 ) -> DataFrame:
@@ -402,17 +337,17 @@ def tfidf_cosine_pairs(
     collected literal — no driver round-trip, plan stays resumable.
     """
     terms = df.select(
-        F.col(id_col).alias("id"),
+        F.col("doc_id").alias("id"),
         F.explode(
             F.filter(
-                F.split(F.lower(F.col(text_col)), "[^a-z0-9]+"),
+                F.split(F.lower(F.col("text")), "[^a-z0-9]+"),
                 lambda t: F.length(t) > 1,
             )
         ).alias("term"),
     )
     tf = terms.groupBy("id", "term").agg(F.count(F.lit(1)).alias("tf"))
     n_docs = df.select(
-        F.countDistinct(F.col(id_col)).cast("double").alias("n_docs")
+        F.countDistinct(F.col("doc_id")).cast("double").alias("n_docs")
     )
     dfreq = (
         tf.groupBy("term")
@@ -456,8 +391,6 @@ def tfidf_cosine_pairs(
 
 def shingle_containment_pairs(
     df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     n: int = 3,
     threshold: float = 0.8,
     max_df: int = 1000,
@@ -478,7 +411,7 @@ def shingle_containment_pairs(
     containment over the filtered space), window-carried sizes keeping
     the a/b branches ReuseExchange-identical.
     """
-    sh = word_shingles(df, id_col, text_col, n)
+    sh = word_shingles(df, n)
     low_df = (
         sh.groupBy("shingle")
         .agg(F.count(F.lit(1)).alias("df_"))
@@ -512,8 +445,6 @@ def shingle_containment_pairs(
 def decontaminate(
     df: DataFrame,
     benchmark: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     n: int = 8,
 ) -> DataFrame:
     """Benchmark decontamination: flag training documents sharing any word
@@ -533,14 +464,14 @@ def decontaminate(
     the count is of DISTINCT shared n-grams (word_shingles dedupes per doc).
     """
     bench_sh = (
-        word_shingles(benchmark, id_col, text_col, n).select("shingle").distinct()
+        word_shingles(benchmark, n).select("shingle").distinct()
     )
-    train_sh = word_shingles(df, id_col, text_col, n)
+    train_sh = word_shingles(df, n)
     hits = train_sh.join(F.broadcast(bench_sh), "shingle", "left_semi")
     return (
         hits.groupBy("id")
         .agg(F.count(F.lit(1)).alias("n_contaminated_shingles"))
-        .select(F.col("id").alias(id_col), "n_contaminated_shingles")
+        .select(F.col("id").alias("doc_id"), "n_contaminated_shingles")
     )
 
 
@@ -548,7 +479,6 @@ def keep_canonical(
     docs: DataFrame,
     clusters: DataFrame,
     quality: Column,
-    id_col: str = "doc_id",
 ) -> tuple[DataFrame, DataFrame]:
     """Dedup EXECUTION: one survivor per cluster — argmax ``quality``
     (evaluated over the doc columns), smallest-id tie-break — and the rest
@@ -577,20 +507,20 @@ def keep_canonical(
     100M-doc corpus would blow the broadcast limit); AQE picks the join
     strategy.
     """
-    cmap = clusters.select(F.col("id").alias(id_col), "cluster_id")
-    j = docs.join(cmap, id_col, "left").withColumn(
-        "cluster_id", F.coalesce(F.col("cluster_id"), F.col(id_col))
+    cmap = clusters.select(F.col("id").alias("doc_id"), "cluster_id")
+    j = docs.join(cmap, "doc_id", "left").withColumn(
+        "cluster_id", F.coalesce(F.col("cluster_id"), F.col("doc_id"))
     )
     winners = j.groupBy("cluster_id").agg(
         F.min_by(
-            F.col(id_col),
-            F.struct((-quality).alias("neg_q"), F.col(id_col).alias("id")),
+            F.col("doc_id"),
+            F.struct((-quality).alias("neg_q"), F.col("doc_id").alias("id")),
         ).alias("keep_id"),
         F.count(F.lit(1)).alias("cluster_size"),
     )
     survivors = docs.join(
-        winners.select(F.col("keep_id").alias(id_col)),
-        id_col,
+        winners.select(F.col("keep_id").alias("doc_id")),
+        "doc_id",
         "left_semi",
     )
     return survivors, winners
@@ -598,8 +528,6 @@ def keep_canonical(
 
 def dedup_lines(
     docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     min_line_chars: int = 1,
 ) -> DataFrame:
     """Cross-document line dedup (C4-style boilerplate removal): every
@@ -618,19 +546,19 @@ def dedup_lines(
     document's line count. Two shuffles total, no joins, no driver state.
     """
     ln = docs.select(
-        F.col(id_col),
-        F.posexplode(F.split(F.col(text_col), "\n")).alias("line_no", "line"),
+        F.col("doc_id"),
+        F.posexplode(F.split(F.col("text"), "\n")).alias("line_no", "line"),
     )
     w = Window.partitionBy("line")
-    owner = F.min(F.struct(id_col, "line_no")).over(w)
+    owner = F.min(F.struct("doc_id", "line_no")).over(w)
     keep = (F.length("line") < min_line_chars) | (
-        F.struct(F.col(id_col), F.col("line_no")) == owner
+        F.struct(F.col("doc_id"), F.col("line_no")) == owner
     )
     kept = ln.select(
-        id_col, "line_no", "line", keep.alias("__keep")
+        "doc_id", "line_no", "line", keep.alias("__keep")
     )
     return (
-        kept.groupBy(id_col)
+        kept.groupBy("doc_id")
         .agg(
             F.array_join(
                 F.transform(
@@ -650,5 +578,5 @@ def dedup_lines(
             F.sum((~F.col("__keep")).cast("long")).alias("n_lines_removed"),
         )
         .where(F.col("n_lines_kept") > 0)
-        .select(id_col, "text_out", "n_lines_kept", "n_lines_removed")
+        .select("doc_id", "text_out", "n_lines_kept", "n_lines_removed")
     )

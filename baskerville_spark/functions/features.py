@@ -10,7 +10,7 @@ Two surfaces:
   aggregates (the feature manager's hand-rolled CSE,
   ``models/feature_manager.py:150-205``), then post-aggregation ratio/rate
   columns (``post_group_by_calcs``). The reference runs this per
-  (target, ip) request set; here the group key is a parameter.
+  (target, ip) request set; here the group key is ``user_id``.
 
 - :func:`update_feature_vector` — the updateable-feature merge applied when
   a batch's fresh vector meets the cached past vector
@@ -20,19 +20,17 @@ Two surfaces:
 
 Scale design (10^12 rows):
 
-- ``feature_vector(exact_distinct=False)`` costs ONE shuffle. The lag
-  window hash-partitions by the group key; the per-(key, type) count
-  window then needs only ClusteredDistribution([key, type]), which
-  HashPartitioning(key) already satisfies (a sort, no exchange) — this
-  replaces the reference's top-page self-join
-  (``features/feature_top_page_total.py:30-48``) — and the final
-  ``groupBy(key)`` reuses the same partitioning. With
-  ``exact_distinct=True`` (the reference's own semantics,
-  ``feature_unique_ua_total.py:28`` etc.) Spark's multi-distinct Expand
-  replicates the input 4× and adds two exchanges; at 10^12 rows use the
-  HLL form exactly as the stats profile does (q08/q46,
-  ``checks/stats.py``) — one sketch per group, single exchange (plan
-  pinned in tests/test_features.py).
+- In ``feature_vector`` the lag window hash-partitions by the group key;
+  the per-(key, type) count window then needs only
+  ClusteredDistribution([key, type]), which HashPartitioning(key) already
+  satisfies (a sort, no exchange) — this replaces the reference's
+  top-page self-join (``features/feature_top_page_total.py:30-48``) — and
+  the final ``groupBy(key)`` reuses the same partitioning. The exact
+  distinct counts (the reference's own semantics,
+  ``feature_unique_ua_total.py:28`` etc.) add Spark's multi-distinct
+  Expand (the input replicated 4×) and two exchanges; at 10^12 rows use
+  the HLL form exactly as the stats profile does (q08/q46,
+  ``checks/stats.py``) — one sketch per group, single exchange.
 - ``update_feature_vector`` is a left join of the batch's vectors against
   the cache keyed the same way — broadcast when the batch is small,
   sort-merge otherwise; every update expression is pure Column algebra.
@@ -50,19 +48,10 @@ from pyspark.sql import functions as F
 # Full-vector computation
 # ---------------------------------------------------------------------------
 
-def feature_vector(
-    events: DataFrame,
-    key: str = "user_id",
-    ts_col: str = "ts",
-    order_col: str = "event_id",
-    type_col: str = "event_type",
-    value_col: str = "value",
-    depth_col: Column | None = None,
-    round_dp: int = 4,
-    exact_distinct: bool = True,
-    rsd: float = 0.02,
-) -> DataFrame:
-    """Per-``key`` feature vector covering every reference feature family.
+def feature_vector(events: DataFrame) -> DataFrame:
+    """Per-``user_id`` feature vector of an events table (``user_id``,
+    ``ts``, ``event_id``, ``event_type``, ``value``, ``props``) covering
+    every reference feature family.
 
     Column ↔ reference-class map (all under ``src/baskerville/features/``):
 
@@ -100,36 +89,32 @@ def feature_vector(
     deterministic forms are q33 (window first/last) and q37 (geo localize);
     the reference's bare ``F.first`` is order-dependent.
 
-    ``depth_col`` defaults to ``get_json_object(props, '$.k')`` cast to int
-    (the events table's path-depth analog).
+    The path depth is ``get_json_object(props, '$.k')`` cast to int (the
+    events table's path-depth analog).
 
-    ``exact_distinct=True`` (the reference's exact ``countDistinct``) makes
-    Spark plan the multi-distinct Expand: the input is replicated 4× and
+    The distinct counts are the reference's exact ``countDistinct``, so
+    Spark plans the multi-distinct Expand: the input is replicated 4× and
     TWO extra exchanges appear (one on the expanded (key, col, gid) tuple,
-    one back to the key). ``exact_distinct=False`` swaps in
-    ``approx_count_distinct`` (HLL++, ``rsd``) — fully algebraic, so the
-    whole funnel collapses to ONE exchange (pinned by
-    tests/test_features.py::test_hll_vector_single_exchange); that is the
-    10^12-row configuration, with q46 grading the sketch error bound.
+    one back to the key). At 10^12 rows the HLL form of the stats profile
+    (q08/q46, ``checks/stats.py``) is the one-exchange alternative.
     """
-    if depth_col is None:
-        depth_col = F.get_json_object(F.col("props"), "$.k").cast("int")
-    ts_us = F.unix_micros(F.col(ts_col).cast("timestamp"))
+    key = "user_id"
+    ts_us = F.unix_micros(F.col("ts").cast("timestamp"))
 
-    w_lag = Window.partitionBy(key).orderBy(ts_col, order_col)
-    w_type = Window.partitionBy(key, type_col)
+    w_lag = Window.partitionBy(key).orderBy("ts", "event_id")
+    w_type = Window.partitionBy(key, "event_type")
     pre = events.select(
         key,
-        type_col,
-        value_col,
+        "event_type",
+        "value",
         ts_us.alias("__ts_us"),
-        depth_col.alias("__k"),
+        F.get_json_object(F.col("props"), "$.k").cast("int").alias("__k"),
         ((ts_us - F.lag(ts_us).over(w_lag)) / F.lit(1e6)).alias("__interval_s"),
         F.count(F.lit(1)).over(w_type).alias("__type_count"),
     )
 
-    t = F.col(type_col)
-    val = F.col(value_col)
+    t = F.col("event_type")
+    val = F.col("value")
     cat_counts = [
         F.count(F.when(t == name, 1)).alias(f"{name}_total")
         for name in ("view", "click", "signup", "purchase", "error")
@@ -140,23 +125,9 @@ def feature_vector(
         F.count(F.when((t == "error") & (F.col("__k") >= 50), 1)).alias(
             "err5_total"
         ),
-        *(
-            [
-                F.countDistinct(t).alias("unique_type_total"),
-                F.countDistinct(F.col("__k")).alias("unique_k_total"),
-                F.countDistinct(F.floor(val)).alias("unique_val_total"),
-            ]
-            if exact_distinct
-            else [
-                F.approx_count_distinct(t, rsd).alias("unique_type_total"),
-                F.approx_count_distinct(F.col("__k"), rsd).alias(
-                    "unique_k_total"
-                ),
-                F.approx_count_distinct(F.floor(val), rsd).alias(
-                    "unique_val_total"
-                ),
-            ]
-        ),
+        F.countDistinct(t).alias("unique_type_total"),
+        F.countDistinct(F.col("__k")).alias("unique_k_total"),
+        F.countDistinct(F.floor(val)).alias("unique_val_total"),
         F.avg(F.col("__k")).alias("__depth_avg"),
         F.var_samp(F.col("__k")).alias("__depth_var"),
         F.avg(val * F.lit(0.001)).alias("__payload_avg"),
@@ -240,7 +211,7 @@ def feature_vector(
     return vec.select(
         *keep,
         *[
-            F.round(c, round_dp).cast("float").alias(name)
+            F.round(c, 4).cast("float").alias(name)
             for name, c in post.items()
         ],
     )

@@ -43,23 +43,19 @@ def tz_offset_udf(spark: SparkSession):
     return tz_offset
 
 
-def localize_events(
-    df: DataFrame,
-    lon_col: str = "lon",
-    ts_col: str = "ts",
-    user_col: str = "user_id",
-) -> DataFrame:
-    """Per-user local-time stats: (user, lon, tz_offset, n_night_events).
+def localize_events(df: DataFrame) -> DataFrame:
+    """Per-user local-time stats from (user_id, lon, ts) events:
+    (user_id, lon, tz_offset, n_night_events).
 
     The only Python in the plan is the broadcast-table lookup (one Arrow
     batch per partition); interval arithmetic and the hour extraction are
     JVM-side expressions.
     """
     udf = tz_offset_udf(df.sparkSession)
-    with_off = df.withColumn("tz_offset", udf(F.col(lon_col)))
-    local_ts = F.col(ts_col).cast("timestamp") + F.expr(
+    with_off = df.withColumn("tz_offset", udf(F.col("lon")))
+    local_ts = F.col("ts").cast("timestamp") + F.expr(
         "make_interval(0, 0, 0, 0, tz_offset, 0, 0)"
     )
-    return with_off.groupBy(user_col, lon_col, "tz_offset").agg(
+    return with_off.groupBy("user_id", "lon", "tz_offset").agg(
         F.count(F.when(F.hour(local_ts) < 6, F.lit(1))).alias("n_night_events")
     )

@@ -36,7 +36,7 @@ Scale design:
   propagation converges in a handful of rounds; for adversarial
   long-path graphs ``connected_components_bigstar`` implements the
   large-star/small-star alternation of the same paper, converging in
-  O(log n) rounds regardless of diameter — ``max_iters`` exhaustion on
+  O(log n) rounds regardless of diameter — ``LABEL_MAX_ITERS`` exhaustion on
   the label path is a loud failure pointing at the swap, never a silent
   wrong answer.
 """
@@ -160,16 +160,14 @@ class _Ckpt:
 _INTEGRAL_TYPES = {"tinyint", "smallint", "int", "bigint"}
 
 
-def _require_integral_ids(
-    vertices: DataFrame, id_col: str, edges: DataFrame, src_col: str, dst_col: str
-) -> None:
+def _require_integral_ids(vertices: DataFrame, edges: DataFrame) -> None:
     """Loud guard: both CC algorithms need integral ids. The decimal-sum
     witness casts ids; on string ids ANSI mode crashes mid-loop and
     non-ANSI silently yields NULL sums that compare equal from round one
     (= premature convergence, wrong answer), and even numeric STRINGS
     order lexicographically (min('9','12') = '12'). Hash string keys
     through F.xxhash64 before clustering."""
-    for df, cols in ((vertices, [id_col]), (edges, [src_col, dst_col])):
+    for df, cols in ((vertices, ["id"]), (edges, ["src", "dst"])):
         dt = dict(df.dtypes)
         for c in cols:
             if c in dt and dt[c] not in _INTEGRAL_TYPES:
@@ -202,16 +200,16 @@ def star_edges(
     )
 
 
+#: Round caps of the two connected-components loops.
+LABEL_MAX_ITERS = 25
+BIGSTAR_MAX_ITERS = 30
+
+
 def connected_components(
     vertices: DataFrame,
     edges: DataFrame,
-    id_col: str = "id",
-    src_col: str = "src",
-    dst_col: str = "dst",
-    max_iters: int = 25,
-    return_iters: bool = False,
     init_labels: DataFrame | None = None,
-):
+) -> DataFrame:
     """Min-label propagation over an undirected edge list.
 
     Returns (id, cluster_id) with cluster_id = the minimum vertex id
@@ -225,7 +223,7 @@ def connected_components(
     set, superseded rounds' files deleted) and the
     label SUM — strictly decreasing while any label moves — is the
     convergence check, a single scan with no self-join diff. Raises
-    RuntimeError after ``max_iters`` non-converged rounds (diameter
+    RuntimeError after ``LABEL_MAX_ITERS`` non-converged rounds (diameter
     exceeded: switch the caller to ``connected_components_bigstar``
     rather than raising the cap past ~O(log n) expectations).
 
@@ -242,24 +240,22 @@ def connected_components(
     ``dedup_clusters`` uses it to pre-fold the first propagation round
     into the bucket-root aggregate it has already paid for.
     """
-    _require_integral_ids(vertices, id_col, edges, src_col, dst_col)
+    _require_integral_ids(vertices, edges)
     ckpt = _Ckpt()
     # one-off instance: the shared ckpt would delete sym's files on the
     # first labels commit while rounds 2+ still read them; released in
     # the finally once nothing references sym anymore
     sym_ckpt = _Ckpt()
     sym = sym_ckpt(
-        edges.select(F.col(src_col).alias("a"), F.col(dst_col).alias("b"))
-        .union(edges.select(F.col(dst_col).alias("a"), F.col(src_col).alias("b")))
+        edges.select(F.col("src").alias("a"), F.col("dst").alias("b"))
+        .union(edges.select(F.col("dst").alias("a"), F.col("src").alias("b")))
         .distinct()
     )
-    verts = vertices.select(F.col(id_col).alias("id")).distinct()
+    verts = vertices.select("id").distinct()
     if init_labels is None:
         labels = ckpt.lazy(verts.withColumn("label", F.col("id")))
     else:
-        seeds = init_labels.select(
-            F.col(id_col).alias("id"), F.col("label").alias("__seed")
-        )
+        seeds = init_labels.select("id", F.col("label").alias("__seed"))
         labels = ckpt.lazy(
             verts.join(seeds, "id", "left").select(
                 "id",
@@ -273,7 +269,7 @@ def connected_components(
     prev_sum = labels.agg(F.sum(F.col("label").cast("decimal(38,0)"))).collect()[0][0]
     ckpt.committed(labels)
     try:
-        for it in range(1, max_iters + 1):
+        for _ in range(LABEL_MAX_ITERS):
             nbr_min = (
                 sym.join(labels, sym["a"] == labels["id"])
                 .groupBy(F.col("b").alias("nid"))
@@ -292,11 +288,10 @@ def connected_components(
             ).collect()[0][0]
             ckpt.committed(labels)
             if new_sum == prev_sum:
-                out = labels.select("id", F.col("label").alias("cluster_id"))
-                return (out, it) if return_iters else out
+                return labels.select("id", F.col("label").alias("cluster_id"))
             prev_sum = new_sum
         raise RuntimeError(
-            f"connected_components did not converge in {max_iters} rounds — "
+            f"connected_components did not converge in {LABEL_MAX_ITERS} rounds — "
             "graph diameter exceeds the dedup-cluster expectation; use a "
             "large-star/small-star contraction for adversarial graphs"
         )
@@ -318,15 +313,7 @@ def _edge_checksum(e: DataFrame) -> tuple:
     return (row["c"], row["su"], row["sv"])
 
 
-def connected_components_bigstar(
-    vertices: DataFrame,
-    edges: DataFrame,
-    id_col: str = "id",
-    src_col: str = "src",
-    dst_col: str = "dst",
-    max_iters: int = 30,
-    return_iters: bool = False,
-):
+def connected_components_bigstar(vertices: DataFrame, edges: DataFrame) -> DataFrame:
     """Large-star/small-star connected components (Kiveris et al.,
     SoCC'14 §3) — the O(log n)-round alternation for graphs whose
     diameter defeats per-hop min-label propagation (a diameter-d path
@@ -345,14 +332,14 @@ def connected_components_bigstar(
     which moment the edge set IS a star forest (u, component_min); the
     labels come from one left join, isolated vertices keeping their own
     id. Integral ids required (same guard and reason as the label
-    path). Raises after ``max_iters`` rounds (paper bound is O(log^2 n)
+    path). Raises after ``BIGSTAR_MAX_ITERS`` rounds (paper bound is O(log^2 n)
     w.h.p.; 30 rounds covers n ~ 10^12 with a wide margin, so hitting
     the cap means a malformed edge list, not a bigger graph).
     """
-    _require_integral_ids(vertices, id_col, edges, src_col, dst_col)
+    _require_integral_ids(vertices, edges)
     sym = (
-        edges.select(F.col(src_col).alias("u"), F.col(dst_col).alias("v"))
-        .union(edges.select(F.col(dst_col).alias("u"), F.col(src_col).alias("v")))
+        edges.select(F.col("src").alias("u"), F.col("dst").alias("v"))
+        .union(edges.select(F.col("dst").alias("u"), F.col("src").alias("v")))
         .where(F.col("u") != F.col("v"))
         .distinct()
     )
@@ -366,9 +353,7 @@ def connected_components_bigstar(
     e = ckpt.lazy(e)
     prev = _edge_checksum(e)  # materializes the lazy checkpoint
     ckpt.committed(e)
-    iters = 0
-    for it in range(1, max_iters + 1):
-        iters = it
+    for _ in range(BIGSTAR_MAX_ITERS):
         cur_sym = e.union(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
         lmins = cur_sym.groupBy("u").agg(F.min("v").alias("mn"))
         large = (
@@ -396,7 +381,7 @@ def connected_components_bigstar(
         prev = cur
     else:
         raise RuntimeError(
-            f"connected_components_bigstar did not converge in {max_iters} "
+            f"connected_components_bigstar did not converge in {BIGSTAR_MAX_ITERS} "
             "rounds — edge list is likely malformed (self-referential or "
             "non-id-typed keys); the paper bound is O(log^2 n) w.h.p."
         )
@@ -424,16 +409,14 @@ def connected_components_bigstar(
         bad, deep = f_bad.result(), f_deep.result()
     if bad or deep:
         raise RuntimeError(
-            "bigstar fixed point is not a star forest (checksum collision) "
-            "— rerun with a larger max_iters"
+            "bigstar fixed point is not a star forest (checksum collision)"
         )
-    out = (
-        vertices.select(F.col(id_col).alias("id"))
+    return (
+        vertices.select("id")
         .distinct()
         .join(stars, F.col("id") == F.col("u"), "left")
         .select("id", F.coalesce("root", "id").alias("cluster_id"))
     )
-    return (out, iters) if return_iters else out
 
 
 def dedup_clusters(
@@ -456,7 +439,7 @@ def dedup_clusters(
     min-label propagation — optimal for the tiny-diameter graphs bucket
     relations produce; 'bigstar' is the large-star/small-star alternation
     — O(log n) rounds on adversarial long-chain graphs where per-hop
-    propagation would exhaust max_iters.
+    propagation would exhaust ``LABEL_MAX_ITERS``.
     """
     if algorithm not in ("label", "bigstar"):
         raise ValueError(f"algorithm must be 'label' or 'bigstar', got {algorithm!r}")
@@ -499,10 +482,7 @@ def dedup_clusters(
 
 
 def prior_label_membership(
-    labels: DataFrame,
-    id_col: str = "id",
-    cluster_col: str = "cluster_id",
-    bucket_col: str = "bucket",
+    labels: DataFrame, id_col: str = "id", bucket_col: str = "bucket"
 ) -> DataFrame:
     """Fold a previous clustering run's (id, cluster_id) labels into
     bucket-membership rows — term (b) of ``incremental_membership``'s
@@ -515,7 +495,7 @@ def prior_label_membership(
     """
     return labels.select(
         F.col(id_col).alias(id_col),
-        F.concat(F.lit("prior:"), F.col(cluster_col).cast("string")).alias(
+        F.concat(F.lit("prior:"), F.col("cluster_id").cast("string")).alias(
             bucket_col
         ),
     )
@@ -527,7 +507,6 @@ def incremental_membership(
     retained_index: DataFrame,
     id_col: str = "id",
     bucket_col: str = "bucket",
-    cluster_col: str = "cluster_id",
 ) -> DataFrame:
     """The full three-term membership for INCREMENTAL ``dedup_clusters``
     — at 10^12 rows a new ingest batch never re-fingerprints or
@@ -559,11 +538,6 @@ def incremental_membership(
         new_membership.select(id_col, bucket_col)
         .unionByName(bridge)
         .unionByName(
-            prior_label_membership(
-                prior_labels,
-                id_col=id_col,
-                cluster_col=cluster_col,
-                bucket_col=bucket_col,
-            )
+            prior_label_membership(prior_labels, id_col=id_col, bucket_col=bucket_col)
         )
     )

@@ -24,21 +24,15 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
-def file_skip_plan(
-    file_stats: DataFrame,
-    lo: float,
-    hi: float,
-    min_col: str = "min_v",
-    max_col: str = "max_v",
-) -> DataFrame:
+def file_skip_plan(file_stats: DataFrame, lo: float, hi: float) -> DataFrame:
     """Skip/scan decision per file for `value BETWEEN lo AND hi`, from
-    per-file min/max stats: skip iff max < lo OR min > hi. NULL stats
+    per-file ``min_v``/``max_v`` stats: skip iff max < lo OR min > hi. NULL stats
     (files whose footer lacks the column, or all-NULL chunks) force a
     scan — pruning must be SOUND, never clever. Adds (action, reason);
     pure map-side expression over the (tiny) stats table."""
-    below = F.col(max_col) < F.lit(lo)
-    above = F.col(min_col) > F.lit(hi)
-    has_stats = F.col(min_col).isNotNull() & F.col(max_col).isNotNull()
+    below = F.col("max_v") < F.lit(lo)
+    above = F.col("min_v") > F.lit(hi)
+    has_stats = F.col("min_v").isNotNull() & F.col("max_v").isNotNull()
     return file_stats.select(
         "*",
         F.when(has_stats & (below | above), F.lit("skip"))
@@ -69,37 +63,28 @@ def z_value(x: Column, y: Column, bits: int = 16) -> Column:
     return z
 
 
-def plan_compaction(
-    file_stats: DataFrame,
-    target_bytes: int,
-    small_threshold: int | None = None,
-    part_col: str = "partition",
-    file_col: str = "file_id",
-    bytes_col: str = "bytes",
-) -> DataFrame:
+def plan_compaction(file_stats: DataFrame, target_bytes: int) -> DataFrame:
     """Small-file compaction plan (the Iceberg `rewrite_data_files` binpack
-    maintenance op): within each partition, files under ``small_threshold``
-    (default: target) are grouped CONTIGUOUSLY in file order into
+    maintenance op) over (partition, file_id, bytes) file stats: within
+    each partition, files under ``target_bytes`` are grouped CONTIGUOUSLY in file order into
     ~target-byte rewrite groups — group = floor(preceding-small-bytes /
     target), the same prefix-sum binning as pack_sequences but keyed by
     partition, so the window is `partitionBy(partition)` and every stage
     stays parallel (no SinglePartition global sort; a 10^6-partition table
     plans in one shuffle of its file-stats rows). Files at or over the
-    threshold keep ``compaction_group`` NULL — already big enough, leave
+    target keep ``compaction_group`` NULL — already big enough, leave
     them alone. Contiguity in file order preserves whatever clustering
     (z-order, time) the files already have."""
     from pyspark.sql import Window
 
-    if small_threshold is None:  # explicit 0 must mean 'compact nothing'
-        small_threshold = target_bytes
-    is_small = F.col(bytes_col) < F.lit(small_threshold)
+    is_small = F.col("bytes") < F.lit(target_bytes)
     w = (
-        Window.partitionBy(part_col)
-        .orderBy(file_col)
+        Window.partitionBy("partition")
+        .orderBy("file_id")
         .rowsBetween(Window.unboundedPreceding, -1)
     )
     before = F.coalesce(
-        F.sum(F.when(is_small, F.col(bytes_col))).over(w), F.lit(0)
+        F.sum(F.when(is_small, F.col("bytes"))).over(w), F.lit(0)
     )
     return file_stats.select(
         "*",

@@ -140,7 +140,7 @@ def _ahash64(img: np.ndarray) -> int:
     return int(np.int64(np.uint64(val)))  # wrap to signed for LongType
 
 
-def _image_meta_batch(b: pd.DataFrame, fmt_col: str = "fmt") -> pd.DataFrame:
+def _image_meta_batch(b: pd.DataFrame) -> pd.DataFrame:
     """One Arrow batch of (item_id, payload, fmt) → image-metadata rows.
 
     Module-level (not a closure) so the codec-seam contract is testable
@@ -152,7 +152,7 @@ def _image_meta_batch(b: pd.DataFrame, fmt_col: str = "fmt") -> pd.DataFrame:
     """
     rows = []
     for item_id, payload, fmt in zip(
-        b["item_id"].to_numpy(), b["payload"].to_numpy(), b[fmt_col].to_numpy()
+        b["item_id"].to_numpy(), b["payload"].to_numpy(), b["fmt"].to_numpy()
     ):
         try:
             img = _decode_image(bytes(payload), fmt)
@@ -172,7 +172,7 @@ def _image_meta_batch(b: pd.DataFrame, fmt_col: str = "fmt") -> pd.DataFrame:
     return pd.DataFrame(rows, columns=[f.name for f in IMAGE_META_SCHEMA.fields])
 
 
-def image_features(df: DataFrame, fmt_col: str = "fmt") -> DataFrame:
+def image_features(df: DataFrame) -> DataFrame:
     """mapInPandas over (item_id, payload, fmt) → typed image metadata.
 
     Arrow batches bounded by maxRecordsPerBatch (payloads are large);
@@ -181,9 +181,9 @@ def image_features(df: DataFrame, fmt_col: str = "fmt") -> DataFrame:
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for b in batches:
-            yield _image_meta_batch(b, fmt_col)
+            yield _image_meta_batch(b)
 
-    return df.select("item_id", "payload", fmt_col).mapInPandas(
+    return df.select("item_id", "payload", "fmt").mapInPandas(
         run, schema=IMAGE_META_SCHEMA
     )
 
@@ -216,7 +216,7 @@ def _iter_video_frames(payload: bytes, fmt: str):
         yield i, np.frombuffer(payload, np.uint8, count=fsz, offset=12 + i * fsz).reshape(h, w)
 
 
-def sample_frames(df: DataFrame, every_k: int = 10, fmt_col: str = "fmt") -> DataFrame:
+def sample_frames(df: DataFrame, every_k: int = 10) -> DataFrame:
     """Frame sampling over binary video payloads: mapInPandas fans each
     video out to one NARROW row per sampled frame (every ``every_k``-th) —
     pixels never return to the JVM; downstream joins/aggs see only
@@ -226,7 +226,7 @@ def sample_frames(df: DataFrame, every_k: int = 10, fmt_col: str = "fmt") -> Dat
         for b in batches:
             rows = []
             for item_id, payload, fmt in zip(
-                b["item_id"].to_numpy(), b["payload"].to_numpy(), b[fmt_col].to_numpy()
+                b["item_id"].to_numpy(), b["payload"].to_numpy(), b["fmt"].to_numpy()
             ):
                 try:
                     for i, frame in _iter_video_frames(bytes(payload), fmt):
@@ -236,7 +236,7 @@ def sample_frames(df: DataFrame, every_k: int = 10, fmt_col: str = "fmt") -> Dat
                     rows.append((item_id, None, None, False))
             yield pd.DataFrame(rows, columns=[f.name for f in VIDEO_FRAME_SCHEMA.fields])
 
-    return df.select("item_id", "payload", fmt_col).mapInPandas(
+    return df.select("item_id", "payload", "fmt").mapInPandas(
         run, schema=VIDEO_FRAME_SCHEMA
     )
 

@@ -21,9 +21,9 @@ dies at 100 TB.
    partition id; the within-block running sum is a per-partition window
    (partitionBy block), so no task ever sees more than one block.
 
-Token counting is whitespace tokens (`F.split(trim, '\\s+')`) — identical
-to quality_features' token_count_ws; swap in token_count_bpe or a real
-tokenizer count column via ``tokens_col``.
+Token counting is whitespace tokens of ``text`` (`F.split(trim, '\\s+')`)
+— identical to quality_features' token_count_ws; documents are keyed by
+``doc_id``.
 """
 
 from __future__ import annotations
@@ -32,34 +32,21 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def pack_sequences(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    tokens_col: str | None = None,
-    bin_tokens: int = 512,
-    n_blocks: int | None = None,
-) -> DataFrame:
-    """(id, n_tokens, start_offset, bin_id): the context window each doc
-    starts in when docs are concatenated in ``id_col`` order and split
+def pack_sequences(df: DataFrame, bin_tokens: int = 512) -> DataFrame:
+    """(doc_id, n_tokens, start_offset, bin_id): the context window each
+    doc starts in when docs are concatenated in ``doc_id`` order and split
     every ``bin_tokens`` tokens.
 
-    ``tokens_col`` uses a precomputed token-count column; otherwise counts
-    whitespace tokens of ``text_col``. Ids must be unique (they are the
-    concatenation order). For P range blocks the literal offset map holds
+    ``n_tokens`` counts the whitespace tokens of ``text``. Ids must be
+    unique (they are the concatenation order). The ids are range-split
+    into P = default-parallelism blocks; the literal offset map holds
     P entries — fine into the thousands; beyond that, broadcast-join a tiny
     (block, offset) frame instead (same plan shape).
     """
-    tok = (
-        F.col(tokens_col)
-        if tokens_col is not None
-        else F.size(F.split(F.trim(F.col(text_col)), r"\s+"))
-    )
-    base = df.select(F.col(id_col).alias("id"), tok.cast("long").alias("n_tokens"))
-    if n_blocks is None:
-        n_blocks = base.sparkSession.sparkContext.defaultParallelism
+    tok = F.size(F.split(F.trim(F.col("text")), r"\s+"))
+    base = df.select(F.col("doc_id").alias("id"), tok.cast("long").alias("n_tokens"))
     ranged = (
-        base.repartitionByRange(n_blocks, "id")
+        base.repartitionByRange(base.sparkSession.sparkContext.defaultParallelism, "id")
         .withColumn("block", F.spark_partition_id())
     )
     # phase 1: ONE job over the range exchange collects per-block totals AND
@@ -79,7 +66,7 @@ def pack_sequences(
     )
     if not stats:
         return base.select(
-            F.col("id").alias(id_col),
+            F.col("id").alias("doc_id"),
             "n_tokens",
             F.lit(0).cast("bigint").alias("start_offset"),
             F.lit(0).cast("bigint").alias("bin_id"),
@@ -117,28 +104,26 @@ def pack_sequences(
     )
     start = (off + F.sum("n_tokens").over(w) - F.col("n_tokens")).cast("bigint")
     return base.withColumn("block", block).select(
-        F.col("id").alias(id_col),
+        F.col("id").alias("doc_id"),
         "n_tokens",
         start.alias("start_offset"),
         F.floor(start / F.lit(bin_tokens)).cast("bigint").alias("bin_id"),
     )
 
 
-def packed_bin_summary(packed: DataFrame, id_col: str = "doc_id") -> DataFrame:
+def packed_bin_summary(packed: DataFrame) -> DataFrame:
     """Per-bin rollup of ``pack_sequences`` output: doc count, token mass,
     id span — the shape a packing job reports for mix auditing."""
     return packed.groupBy("bin_id").agg(
         F.count(F.lit(1)).alias("n_docs"),
         F.sum("n_tokens").alias("n_tokens"),
-        F.min(id_col).alias("first_doc"),
-        F.max(id_col).alias("last_doc"),
+        F.min("doc_id").alias("first_doc"),
+        F.max("doc_id").alias("last_doc"),
     )
 
 
 def chunk_documents(
     df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     chunk_tokens: int = 100,
     stride: int = 80,
 ) -> DataFrame:
@@ -152,19 +137,19 @@ def chunk_documents(
     tokenizer's inverse for whitespace tokens); chunk_md5 fingerprints it
     so content — not just counts — is under any downstream comparison.
     """
-    toks = F.split(F.trim(F.col(text_col)), r"\s+")
+    toks = F.split(F.trim(F.col("text")), r"\s+")
     n = F.size(toks)
     starts = F.sequence(F.lit(0), F.greatest(n - 1, F.lit(0)), F.lit(stride))
     chunk = F.slice(F.col("__toks"), F.col("start_tok") + 1, chunk_tokens)
     return (
         df.select(
-            F.col(id_col).alias(id_col),
+            "doc_id",
             toks.alias("__toks"),
             n.alias("__n"),
             F.posexplode(starts).alias("chunk_idx", "start_tok"),
         )
         .select(
-            id_col,
+            "doc_id",
             "chunk_idx",
             "start_tok",
             F.least(F.lit(chunk_tokens), F.col("__n") - F.col("start_tok"))

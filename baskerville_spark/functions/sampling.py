@@ -86,44 +86,22 @@ def mixture_sample(
     return df.where(hash_bucket(F.col(id_col)) < thr)
 
 
-def train_val_test_split(
-    id_col: str = "doc_id",
-    fracs: tuple[float, ...] = (0.8, 0.1, 0.1),
-    names: tuple[str, ...] = ("train", "val", "test"),
-    n_buckets: int = 1000,
-) -> Column:
-    """Split-assignment column: deterministic, engine-portable (the md5
-    hash_bucket variate), disjoint and exhaustive by construction —
-    cumulative bucket thresholds carve [0, n_buckets) into one interval
-    per split. A pure map-side expression over the id column alone (no
-    DataFrame parameter — nothing else feeds the assignment): no shuffle,
-    no state, stable across runs/partitionings/engines, so a doc can
-    never leak between train and eval splits when the corpus is
-    re-processed. Cumulative thresholds must be strictly increasing —
-    a nonzero frac that rounds to an empty bucket interval (frac <
-    ~0.5/n_buckets) is an error, not a silent empty split; raise
-    n_buckets instead."""
-    if len(fracs) != len(names) or abs(sum(fracs) - 1.0) > 1e-9:
-        raise ValueError("fracs must match names and sum to 1")
-    thresholds = []
-    cum = 0.0
-    for frac in fracs[:-1]:
-        cum += frac
-        thresholds.append(int(round(cum * n_buckets)))
-    if any(
-        t2 <= t1 for t1, t2 in zip([0] + thresholds, thresholds + [n_buckets])
-    ):
-        raise ValueError(
-            f"thresholds {thresholds} of {n_buckets} not strictly increasing: "
-            "some split would be empty; raise n_buckets"
-        )
-    if not thresholds:  # single split: everything gets the one name
-        return F.lit(names[-1]).alias("split")
-    b = hash_bucket(F.col(id_col), n_buckets)
-    expr = F.when(b < F.lit(thresholds[0]), F.lit(names[0]))
-    for thr, name in zip(thresholds[1:], names[1:-1]):
-        expr = expr.when(b < F.lit(thr), F.lit(name))
-    return expr.otherwise(F.lit(names[-1])).alias("split")
+def train_val_test_split(id_col: str = "doc_id") -> Column:
+    """80/10/10 train/val/test assignment column: deterministic,
+    engine-portable (the md5 hash_bucket variate over 1000 buckets),
+    disjoint and exhaustive by construction — the cumulative thresholds
+    800 and 900 carve [0, 1000) into one interval per split. A pure
+    map-side expression over the id column alone (no DataFrame parameter —
+    nothing else feeds the assignment): no shuffle, no state, stable across
+    runs/partitionings/engines, so a doc can never leak between train and
+    eval splits when the corpus is re-processed."""
+    b = hash_bucket(F.col(id_col), 1000)
+    return (
+        F.when(b < F.lit(800), F.lit("train"))
+        .when(b < F.lit(900), F.lit("val"))
+        .otherwise(F.lit("test"))
+        .alias("split")
+    )
 
 
 def select_within_token_budget(

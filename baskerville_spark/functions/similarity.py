@@ -1,4 +1,5 @@
-"""Similarity search over embedding columns (array<float>).
+"""Similarity search over the ``embedding`` column (array<float>) of a
+table keyed by ``vec_id``.
 
 - ``cosine_topk``: brute-force top-k against a query vector. The dot product
   is ``F.zip_with`` + ``F.aggregate`` — JVM-side array math, no Python. The
@@ -61,15 +62,13 @@ def cosine_topk(
     df: DataFrame,
     query_vec: list[float],
     k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Top-k rows by cosine similarity to a constant query vector."""
     q = F.array(*[F.lit(float(x)) for x in query_vec])
-    emb = F.transform(F.col(vec_col), lambda x: x.cast("double"))
+    emb = F.transform(F.col("embedding"), lambda x: x.cast("double"))
     return (
         df.select(
-            F.col(id_col).alias("id"),
+            F.col("vec_id").alias("id"),
             cosine(emb, q).cast("double").alias("cosine_sim"),
         )
         .orderBy(F.desc("cosine_sim"), F.asc("id"))
@@ -79,8 +78,6 @@ def cosine_topk(
 
 def hyperplane_lsh_pairs(
     df: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     dim: int = 64,
     n_planes: int = 12,
     n_tables: int = 2,
@@ -120,8 +117,8 @@ def hyperplane_lsh_pairs(
                 out[i] = b[j]
         return pd.Series(out)
 
-    emb = F.transform(F.col(vec_col), lambda x: x.cast("double"))
-    base = df.select(F.col(id_col).alias("id"), emb.alias("v")).withColumn(
+    emb = F.transform(F.col("embedding"), lambda x: x.cast("double"))
+    base = df.select(F.col("vec_id").alias("id"), emb.alias("v")).withColumn(
         "n", _norm(F.col("v"))
     )
 
@@ -155,8 +152,6 @@ def hyperplane_lsh_pairs(
 
 def ivf_training_sample(
     df: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     sample_mod: int = 10,
     max_train_rows: int = 4096,
 ) -> DataFrame:
@@ -177,40 +172,30 @@ def ivf_training_sample(
     """
     from baskerville_spark.functions.sampling import hash_threshold_keep
 
-    base = df.where(F.col(vec_col).isNotNull())
+    base = df.where(F.col("embedding").isNotNull())
     n = base.count()
     frac = min(1.0 / sample_mod, 0.9 * max_train_rows / max(n, 1))
-    keep = hash_threshold_keep(F.col(id_col), frac)
-    return base.where(keep).select(vec_col).limit(max_train_rows)
+    keep = hash_threshold_keep(F.col("vec_id"), frac)
+    return base.where(keep).select("embedding").limit(max_train_rows)
 
 
 def train_ivf_centroids(
     df: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     n_centroids: int = 16,
     sample_mod: int = 10,
-    iters: int = 10,
-    seed: int = 42,
-    max_train_rows: int | None = None,
 ) -> np.ndarray:
-    """Coarse-quantizer centroids for IVF: seeded Lloyd iterations on a
+    """Coarse-quantizer centroids for IVF: 10 Lloyd iterations on a
     deterministic hash-threshold sample, trained driver-side.
 
-    The sample is HARD-BOUNDED by ``max_train_rows`` (default
-    256·n_centroids — standard IVF practice: the quantizer trains on a
-    bounded sample; assignment is the distributed part). See
-    ``ivf_training_sample`` for the bound guarantee.
+    The sample is HARD-BOUNDED by 256·n_centroids rows (standard IVF
+    practice: the quantizer trains on a bounded sample; assignment is the
+    distributed part). See ``ivf_training_sample`` for the bound guarantee.
     Deterministic: fixed sample, fixed init, fixed iteration count — unlike
     parallel k-means, whose result depends on partitioning.
     """
-    if max_train_rows is None:
-        max_train_rows = 256 * n_centroids
     sample_rows = [
         np.asarray(r[0], dtype=np.float64)
-        for r in ivf_training_sample(
-            df, id_col, vec_col, sample_mod, max_train_rows
-        ).collect()
+        for r in ivf_training_sample(df, sample_mod, 256 * n_centroids).collect()
     ]
     if len(sample_rows) < n_centroids:
         raise ValueError(
@@ -222,8 +207,6 @@ def train_ivf_centroids(
     # and spreads one seed per natural cluster, where a random draw routinely
     # drops several seeds into one dense cluster and leaves others unseeded —
     # Lloyd can't recover from that (it refines, it doesn't migrate seeds).
-    # `seed` is kept for API stability; the init no longer consumes it.
-    _ = seed
     chosen = [0]
     d2min = ((sample - sample[0]) ** 2).sum(1)
     for _i in range(1, n_centroids):
@@ -231,7 +214,7 @@ def train_ivf_centroids(
         chosen.append(nxt)
         d2min = np.minimum(d2min, ((sample - sample[nxt]) ** 2).sum(1))
     cent = sample[chosen].copy()
-    for _ in range(iters):
+    for _ in range(10):
         d2 = ((sample[:, None, :] - cent[None, :, :]) ** 2).sum(-1)
         assign = d2.argmin(1)
         for c in range(n_centroids):
@@ -241,12 +224,7 @@ def train_ivf_centroids(
     return cent
 
 
-def ivf_assign(
-    df: DataFrame,
-    centroids: np.ndarray,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def ivf_assign(df: DataFrame, centroids: np.ndarray) -> DataFrame:
     """(id, v, cluster): nearest-centroid assignment via ONE Arrow-batched
     matmul per batch (argmin ||x−c||² = argmax x·c − ½|c|²)."""
     from pyspark.sql.types import IntegerType
@@ -263,9 +241,9 @@ def ivf_assign(
             out[mask] = scores.argmax(1).astype(np.int32)
         return pd.Series(out)
 
-    emb = F.transform(F.col(vec_col), lambda x: x.cast("double"))
+    emb = F.transform(F.col("embedding"), lambda x: x.cast("double"))
     return df.select(
-        F.col(id_col).alias("id"), emb.alias("v")
+        F.col("vec_id").alias("id"), emb.alias("v")
     ).withColumn("cluster", assign(F.col("v")))
 
 
@@ -275,8 +253,6 @@ def ivf_topk(
     centroids: np.ndarray,
     k: int = 10,
     nprobe: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """IVF approximate top-k: probe only the ``nprobe`` clusters nearest the
     query, brute-force cosine inside them. At scale the assignment is a
@@ -286,7 +262,7 @@ def ivf_topk(
     cent = np.asarray(centroids, dtype=np.float64)
     q = np.asarray(query_vec, dtype=np.float64)
     probe = np.argsort(((cent - q) ** 2).sum(1))[:nprobe].tolist()
-    assigned = ivf_assign(df, cent, id_col, vec_col)
+    assigned = ivf_assign(df, cent)
     cand = assigned.where(F.col("cluster").isin([int(p) for p in probe]))
     qcol = F.array(*[F.lit(float(x)) for x in q])
     return (
@@ -300,8 +276,6 @@ def ivf_topk(
 
 def brute_force_pairs(
     df: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     threshold: float = 0.85,
 ) -> DataFrame:
     """O(n²) all-pairs cosine — the exact baseline (LSH is the scale path).
@@ -309,8 +283,8 @@ def brute_force_pairs(
     Norms are precomputed per vector BEFORE the join, so each pair costs one
     array pass (the dot product) instead of three.
     """
-    emb = F.transform(F.col(vec_col), lambda x: x.cast("double"))
-    base = df.select(F.col(id_col).alias("id"), emb.alias("v")).withColumn(
+    emb = F.transform(F.col("embedding"), lambda x: x.cast("double"))
+    base = df.select(F.col("vec_id").alias("id"), emb.alias("v")).withColumn(
         "n", _norm(F.col("v"))
     )
     a = base.select(F.col("id").alias("id_a"), F.col("v").alias("v_a"), F.col("n").alias("n_a"))
@@ -333,10 +307,6 @@ def cosine_topk_batched(
     df: DataFrame,
     queries: DataFrame,
     k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "vec_id",
-    query_vec_col: str = "embedding",
 ) -> DataFrame:
     """Batch retrieval: exact cosine top-k PER QUERY VECTOR
     (query_id, id, rank, cosine_sim) — the evaluation-harness shape
@@ -354,13 +324,12 @@ def cosine_topk_batched(
     """
     from pyspark.sql import Window
 
-    emb = F.transform(F.col(vec_col), lambda x: x.cast("double"))
-    base = df.select(F.col(id_col).alias("id"), emb.alias("v")).withColumn(
+    emb = F.transform(F.col("embedding"), lambda x: x.cast("double"))
+    base = df.select(F.col("vec_id").alias("id"), emb.alias("v")).withColumn(
         "n", _norm(F.col("v"))
     )
-    qemb = F.transform(F.col(query_vec_col), lambda x: x.cast("double"))
     qs = queries.select(
-        F.col(query_id_col).alias("query_id"), qemb.alias("qv")
+        F.col("vec_id").alias("query_id"), emb.alias("qv")
     ).withColumn("qn", _norm(F.col("qv")))
 
     scored = base.crossJoin(F.broadcast(qs)).select(

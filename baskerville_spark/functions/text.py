@@ -1,7 +1,8 @@
 """Text analysis: token stats, quality scoring, language ID, fingerprinting.
 
 All pure Column algebra (split/regexp/array built-ins) — whole-stage codegen
-end to end, no Python in the hot path.
+end to end, no Python in the hot path. The per-document operators read a
+``doc_id`` and a ``text`` column and emit ``id``.
 """
 
 from __future__ import annotations
@@ -19,22 +20,20 @@ STOPWORDS = {
 }
 
 
-def quality_features(
-    df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
+def quality_features(df: DataFrame) -> DataFrame:
     """Per-document quality metrics: token counts, ratios, mean word length.
 
     token_count_ws: whitespace tokens; token_count_bpe: BPE-ish regex pieces
     (word fragments of <=4 chars, digits, punctuation — a cheap stand-in for
     a real tokenizer's piece count).
     """
-    toks = F.split(F.trim(F.col(text_col)), r"\s+")
-    n_chars = F.length(F.col(text_col))
-    n_alpha = F.length(F.regexp_replace(F.col(text_col), r"[^A-Za-z]", ""))
-    n_punct = F.length(F.regexp_replace(F.col(text_col), r"[^.,;:!?'\"()\[\]{}-]", ""))
-    n_digit = F.length(F.regexp_replace(F.col(text_col), r"[^0-9]", ""))
+    toks = F.split(F.trim(F.col("text")), r"\s+")
+    n_chars = F.length(F.col("text"))
+    n_alpha = F.length(F.regexp_replace(F.col("text"), r"[^A-Za-z]", ""))
+    n_punct = F.length(F.regexp_replace(F.col("text"), r"[^.,;:!?'\"()\[\]{}-]", ""))
+    n_digit = F.length(F.regexp_replace(F.col("text"), r"[^0-9]", ""))
     bpe_pieces = F.regexp_count(
-        F.lower(F.col(text_col)), F.lit(r"[a-z0-9]{1,4}|[^a-z0-9\s]")
+        F.lower(F.col("text")), F.lit(r"[a-z0-9]{1,4}|[^a-z0-9\s]")
     )
     stop_en = F.array(*[F.lit(w) for w in STOPWORDS["en"]])
     low_toks = F.transform(toks, lambda t: F.lower(t))
@@ -42,7 +41,7 @@ def quality_features(
         F.size(F.array_distinct(low_toks)), F.lit(1)
     )
     return df.select(
-        F.col(id_col).alias("id"),
+        F.col("doc_id").alias("id"),
         F.size(toks).cast("long").alias("token_count_ws"),
         bpe_pieces.cast("long").alias("token_count_bpe"),
         n_chars.cast("long").alias("n_chars"),
@@ -54,13 +53,13 @@ def quality_features(
     )
 
 
-def lang_id(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
+def lang_id(df: DataFrame) -> DataFrame:
     """Stopword-overlap language ID: argmax over per-language hit counts.
 
     Counts occurrences (not distinct) of each language's stopwords among the
     tokens; ties broken by language code order for determinism.
     """
-    toks = F.transform(F.split(F.lower(F.col(text_col)), r"\s+"), lambda t: t)
+    toks = F.transform(F.split(F.lower(F.col("text")), r"\s+"), lambda t: t)
     scores = []
     for lang in sorted(STOPWORDS):
         sw = F.array(*[F.lit(w) for w in STOPWORDS[lang]])
@@ -69,30 +68,28 @@ def lang_id(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> Da
     # array_max on struct orders by (hits, lang); invert lang for asc tie-break
     best = F.array_max(F.array(*scores))
     return df.select(
-        F.col(id_col).alias("id"),
+        F.col("doc_id").alias("id"),
         best["lang"].alias("pred_lang"),
         best["hits"].cast("long").alias("lang_hits"),
     )
 
 
-def fingerprint(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
+def fingerprint(df: DataFrame) -> DataFrame:
     """Canonical-form fingerprint: sorted distinct lowercase tokens → md5.
 
     The classic 'fingerprint clustering' key (lowercase, strip punctuation,
     sort-unique tokens, hash) — robust to token reordering and duplication.
     """
-    norm = F.regexp_replace(F.lower(F.col(text_col)), r"[^a-z0-9\s]", " ")
+    norm = F.regexp_replace(F.lower(F.col("text")), r"[^a-z0-9\s]", " ")
     toks = F.filter(F.split(norm, r"\s+"), lambda t: t != "")
     canon = F.concat_ws(" ", F.array_sort(F.array_distinct(toks)))
     return df.select(
-        F.col(id_col).alias("id"),
+        F.col("doc_id").alias("id"),
         F.md5(canon).alias("fingerprint"),
     )
 
 
-def repetition_metrics(
-    df, id_col: str = "doc_id", text_col: str = "text"
-):
+def repetition_metrics(df):
     """Gopher-style within-document repetition signals (Rae et al. 2021,
     §A1.1 repetition filters) — a standard LLM training-data quality
     gate the reference has no analogue for:
@@ -109,7 +106,7 @@ def repetition_metrics(
     """
     from pyspark.sql import functions as F
 
-    toks = F.split(F.lower(F.col(text_col)), r"\s+")
+    toks = F.split(F.lower(F.col("text")), r"\s+")
     k = F.size(toks) - 1
     grams = F.when(
         k >= 1,
@@ -119,7 +116,7 @@ def repetition_metrics(
         ),
     ).otherwise(F.array().cast("array<string>"))
     base = df.select(
-        F.col(id_col).alias("id"),
+        F.col("doc_id").alias("id"),
         toks.alias("toks"),
         grams.alias("grams"),
     )
@@ -151,7 +148,7 @@ def repetition_metrics(
     return ratios.join(top, "id")
 
 
-def char_entropy(df, id_col: str = "doc_id", text_col: str = "text"):
+def char_entropy(df):
     """Per-document Shannon entropy (nats) of the character distribution
     — the CCNet-family quality signal that separates natural text
     (entropy ~ 2.5-3.2 nats over lowercase ASCII) from degenerate
@@ -165,8 +162,8 @@ def char_entropy(df, id_col: str = "doc_id", text_col: str = "text"):
     from pyspark.sql import functions as F
 
     chars = df.select(
-        F.col(id_col).alias("id"),
-        F.explode_outer(F.split(F.coalesce(F.col(text_col), F.lit("")), "")).alias(
+        F.col("doc_id").alias("id"),
+        F.explode_outer(F.split(F.coalesce(F.col("text"), F.lit("")), "")).alias(
             "ch"
         ),
     ).where(F.col("ch") != "")
@@ -181,7 +178,7 @@ def char_entropy(df, id_col: str = "doc_id", text_col: str = "text"):
         )
         .select("id", (F.log("n") - F.col("s") / F.col("n")).alias("entropy"))
     )
-    ids = df.select(F.col(id_col).alias("id")).distinct()
+    ids = df.select(F.col("doc_id").alias("id")).distinct()
     return ids.join(ent, "id", "left").select(
         "id", F.coalesce("entropy", F.lit(0.0)).alias("entropy")
     )
@@ -203,7 +200,7 @@ _PII_PATTERNS = {
 }
 
 
-def pii_scrub(df, id_col: str = "doc_id", text_col: str = "text"):
+def pii_scrub(df):
     """PII detection + scrubbing — the redaction pass every
     training-data pipeline runs before release (emails, IPv4 addresses,
     SSN-shaped and US-phone-shaped numbers; the pattern set is the
@@ -220,7 +217,7 @@ def pii_scrub(df, id_col: str = "doc_id", text_col: str = "text"):
     """
     from pyspark.sql import functions as F
 
-    text = F.coalesce(F.col(text_col), F.lit(""))
+    text = F.coalesce(F.col("text"), F.lit(""))
     counts = [
         F.regexp_count(text, F.lit(rx)).alias(f"{kind}_count")
         for kind, (rx, _) in _PII_PATTERNS.items()
@@ -228,19 +225,14 @@ def pii_scrub(df, id_col: str = "doc_id", text_col: str = "text"):
     scrubbed = text
     for rx, repl in _PII_PATTERNS.values():
         scrubbed = F.regexp_replace(scrubbed, rx, repl)
-    out = df.select(F.col(id_col).alias("id"), *counts, scrubbed.alias("scrubbed"))
+    out = df.select(F.col("doc_id").alias("id"), *counts, scrubbed.alias("scrubbed"))
     total = sum(
         (F.col(f"{k}_count") for k in _PII_PATTERNS), F.lit(0)
     )
     return out.withColumn("pii_total", total)
 
 
-def vocab_top_tokens(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    vocab_size: int = 1000,
-) -> DataFrame:
+def vocab_top_tokens(df: DataFrame, vocab_size: int = 1000) -> DataFrame:
     """Top-``vocab_size`` tokens by corpus frequency (ties broken by token
     order for determinism): (token, cnt, rank).
 
@@ -250,7 +242,7 @@ def vocab_top_tokens(
     per-partition TakeOrdered + driver merge of vocab_size rows — no
     global sort shuffle.
     """
-    toks = F.explode(F.split(F.trim(F.lower(F.col(text_col))), r"\s+")).alias("token")
+    toks = F.explode(F.split(F.trim(F.lower(F.col("text"))), r"\s+")).alias("token")
     counts = (
         df.select(toks)
         .where(F.col("token") != "")
@@ -265,12 +257,7 @@ def vocab_top_tokens(
     )
 
 
-def oov_rate(
-    df: DataFrame,
-    vocab: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def oov_rate(df: DataFrame, vocab: DataFrame) -> DataFrame:
     """Per-document out-of-vocabulary rate against a (token, ...) vocab
     frame: (id, n_tokens, n_oov, oov_ratio).
 
@@ -279,8 +266,8 @@ def oov_rate(
     is the per-doc count — the tokenizer-coverage audit run before
     committing to a vocab.
     """
-    toks = F.explode(F.split(F.trim(F.lower(F.col(text_col))), r"\s+")).alias("token")
-    exploded = df.select(F.col(id_col).alias("id"), toks).where(F.col("token") != "")
+    toks = F.explode(F.split(F.trim(F.lower(F.col("text"))), r"\s+")).alias("token")
+    exploded = df.select(F.col("doc_id").alias("id"), toks).where(F.col("token") != "")
     marked = exploded.join(
         F.broadcast(vocab.select("token").withColumn("__in_v", F.lit(1))),
         "token",

@@ -8,11 +8,13 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
-def low_rate_attack(
-    request_total: Column,
-    duration_s: Column,
-    tiers: list[tuple[float, float]] = ((70.0, 3600.0), (85.0, 60.0)),
-) -> Column:
+#: (request floor, duration floor in s) per low-rate tier (tasks.py:1711-1716)
+LOW_RATE_TIERS = ((70.0, 3600.0), (85.0, 60.0))
+#: verdict columns whose value 1 marks an attack (get_attack_filter)
+ATTACK_COLS = ("prediction", "low_rate_attack")
+
+
+def low_rate_attack(request_total: Column, duration_s: Column) -> Column:
     """The two-tier low-rate-attack predicate (tasks.py:1711-1716,
     detect_low_rate_attack at 1796-1817): a key attacks "low and slow"
     when its request volume exceeds a tier's floor AND it has been active
@@ -20,10 +22,8 @@ def low_rate_attack(
     algebra — the reference wraps the same expression in a feature-json
     unwrap."""
     cond = None
-    for req_floor, dur_floor in tiers:
-        piece = (request_total > F.lit(float(req_floor))) & (
-            duration_s > F.lit(float(dur_floor))
-        )
+    for req_floor, dur_floor in LOW_RATE_TIERS:
+        piece = (request_total > F.lit(req_floor)) & (duration_s > F.lit(dur_floor))
         cond = piece if cond is None else (cond | piece)
     return cond
 
@@ -32,8 +32,6 @@ def challenge_commands(
     verdicts: DataFrame,
     whitelist: DataFrame,
     key: str,
-    attack_cols: tuple[str, ...] = ("prediction", "low_rate_attack"),
-    cmd_name: str = "challenge_ip",
 ) -> DataFrame:
     """The Challenge task's flow (tasks.py:1836-1960) as one declarative
     chain: OR-composed attack filter over the verdict columns
@@ -44,10 +42,9 @@ def challenge_commands(
     to_json (:1952-1956) — the reference loops a KafkaProducer row by row
     on the driver; here the rows are a DataFrame any sink (kafka_shaped,
     real Kafka) writes distributed. The IP-cache "don't re-challenge"
-    dedup is the StateStore TTL pattern (runtime/state.expire_state) —
-    composed by callers that persist challenge history."""
+    dedup is left to callers that persist challenge history."""
     attack = None
-    for c in attack_cols:
+    for c in ATTACK_COLS:
         piece = F.col(c) == 1
         attack = piece if attack is None else (attack | piece)
     return (
@@ -55,10 +52,10 @@ def challenge_commands(
         .join(F.broadcast(whitelist.select(key).distinct()), key, "left_anti")
         .select(
             F.col(key),
-            *[F.col(c) for c in attack_cols],
+            *[F.col(c) for c in ATTACK_COLS],
             F.to_json(
                 F.struct(
-                    F.lit(cmd_name).alias("name"),
+                    F.lit("challenge_ip").alias("name"),
                     F.col(key).cast("string").alias("value"),
                 )
             ).alias("command"),

@@ -195,15 +195,15 @@ def rows_from_range(
     return spark.range(0, n, 1, num_partitions).mapInPandas(batch, schema=schema)
 
 
-def generate_clips(spark: SparkSession, cfg: GenConfig, num_partitions: int | None = None) -> DataFrame:
+def generate_clips(spark: SparkSession, cfg: GenConfig) -> DataFrame:
     """Distributed generation; each row derived from its index."""
     return rows_from_range(
         spark, cfg.n_rows, lambda i: [_row(i, cfg)], CLIP_SCHEMA,
-        num_partitions or _default_partitions(spark, cfg),
+        _default_partitions(spark, cfg),
     )
 
 
-def generate_transcript_ref(spark: SparkSession, cfg: GenConfig, num_partitions: int | None = None) -> DataFrame:
+def generate_transcript_ref(spark: SparkSession, cfg: GenConfig) -> DataFrame:
     """Authoritative transcript dim; RI-violation clip_ids deterministically absent."""
 
     def ref_rows(i: int) -> list[dict]:
@@ -216,7 +216,7 @@ def generate_transcript_ref(spark: SparkSession, cfg: GenConfig, num_partitions:
 
     return rows_from_range(
         spark, cfg.n_rows, ref_rows, TRANSCRIPT_REF_SCHEMA,
-        num_partitions or _default_partitions(spark, cfg),
+        _default_partitions(spark, cfg),
     )
 
 

@@ -9,8 +9,7 @@ sees trouble. The reference materializes the incident host list on the
 driver and burns it into an ``isin`` literal; at 10^12 rows the incident
 set itself can be large, so here it stays a DataFrame and rides a
 left join — same verdicts, no driver round-trip. The join strategy is the
-optimizer's by default (small sets auto-broadcast, huge ones shuffle);
-``broadcast_incidents=True`` forces the hint for known-small sets.
+optimizer's (small sets auto-broadcast, huge ones shuffle).
 """
 
 from __future__ import annotations
@@ -26,42 +25,29 @@ def classify_anomalies(
     scored: DataFrame,
     incidents: DataFrame,
     key: str,
-    score_col: str = "score",
-    threshold: float = DEFAULT_THRESHOLD,
-    threshold_during_incident: float = DEFAULT_THRESHOLD_DURING_INCIDENT,
-    broadcast_incidents: bool = False,
 ) -> DataFrame:
     """Adds the reference's two verdict columns to ``scored``:
 
     - ``attack_prediction`` — 1 when the row's key is in ``incidents``
       (tasks.py:1781-1783)
-    - ``prediction`` — 1 when score exceeds the key's threshold, which is
-      ``threshold_during_incident`` for incident keys else ``threshold``
-      (tasks.py:1785-1794; the intermediate ``threshold`` column is
-      dropped, as the reference drops it)
+    - ``prediction`` — 1 when ``score`` exceeds the key's threshold, which
+      is ``DEFAULT_THRESHOLD_DURING_INCIDENT`` for incident keys else
+      ``DEFAULT_THRESHOLD`` (tasks.py:1785-1794; the intermediate
+      ``threshold`` column is dropped, as the reference drops it)
 
-    ``incidents`` needs only the ``key`` column (deduplicated here).
-
-    ``broadcast_incidents=True`` FORCES a broadcast hint — Spark never
-    size-demotes an explicit hint, so only set it when the incident set is
-    known-small (it collects to the driver and is capped at the 8 GB
-    broadcast limit). The default False lets the optimizer/AQE choose:
-    small sets still broadcast via auto-broadcast sizing; huge ones get a
-    shuffled join instead of an OOM.
+    ``incidents`` needs only the ``key`` column (deduplicated here). No
+    broadcast hint: Spark never size-demotes an explicit hint, so the
+    optimizer/AQE chooses — small sets still broadcast via auto-broadcast
+    sizing; huge ones get a shuffled join instead of an OOM.
     """
     inc = incidents.select(key).distinct().withColumn("__inc", F.lit(1))
-    if broadcast_incidents:
-        inc = F.broadcast(inc)
     is_inc = F.col("__inc").isNotNull()
-    thr = F.when(is_inc, F.lit(threshold_during_incident)).otherwise(
-        F.lit(threshold)
+    thr = F.when(is_inc, F.lit(DEFAULT_THRESHOLD_DURING_INCIDENT)).otherwise(
+        F.lit(DEFAULT_THRESHOLD)
     )
     return (
         scored.join(inc, on=key, how="left_outer")
         .withColumn("attack_prediction", is_inc.cast("int"))
-        .withColumn(
-            "prediction",
-            (F.col(score_col) > thr).cast("int"),
-        )
+        .withColumn("prediction", (F.col("score") > thr).cast("int"))
         .drop("__inc")
     )

@@ -29,7 +29,9 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from baskerville_spark.ml.iforest import training_sample
+from baskerville_spark.ml.iforest import MAX_TRAIN_ROWS, training_sample
+
+LEARNING_RATE = 0.3
 
 
 @dataclass(frozen=True)
@@ -93,11 +95,10 @@ def train_gbm(
     feature_cols: list[str],
     label_col: str,
     n_rounds: int = 50,
-    learning_rate: float = 0.3,
-    max_train_rows: int = 4096,
 ) -> GBMClassifier:
-    """Fit on the capped deterministic sample; labels must be 0/1."""
-    sample = training_sample(df, id_col, feature_cols + [label_col], max_train_rows)
+    """Fit ``n_rounds`` stumps at ``LEARNING_RATE`` on the capped
+    deterministic sample; labels must be 0/1."""
+    sample = training_sample(df, id_col, feature_cols + [label_col], MAX_TRAIN_ROWS)
     if len(sample) < 2:
         raise ValueError(f"training sample has {len(sample)} rows < 2")
     x, y = sample[:, :-1], sample[:, -1]
@@ -115,14 +116,14 @@ def train_gbm(
         thr.append(t)
         left.append(lv)
         right.append(rv)
-        logit = logit + learning_rate * np.where(x[:, f] <= t, lv, rv)
+        logit = logit + LEARNING_RATE * np.where(x[:, f] <= t, lv, rv)
     return GBMClassifier(
         bias,
         np.asarray(feat, dtype=np.int64),
         np.asarray(thr, dtype=np.float64),
         np.asarray(left, dtype=np.float64),
         np.asarray(right, dtype=np.float64),
-        learning_rate,
+        LEARNING_RATE,
         len(feature_cols),
     )
 
@@ -156,10 +157,9 @@ def predict_label(
     model: GBMClassifier,
     id_col: str,
     feature_cols: list[str],
-    threshold: float = 0.5,
 ) -> DataFrame:
-    """(id, predicted 0/1) at a probability threshold — the reference's
+    """(id, predicted 0/1) at probability 0.5 — the reference's
     attack/benign labeling step."""
     return predict_proba(df, model, id_col, feature_cols).select(
-        "id", (F.col("probability") > threshold).cast("int").alias("predicted")
+        "id", (F.col("probability") > 0.5).cast("int").alias("predicted")
     )

@@ -11,7 +11,7 @@ pure numpy forest:
   quality comes from the ensemble, not from seeing every row). The sample
   is the same deterministic md5-threshold + ``limit`` capped collect the
   IVF quantizer uses (functions/similarity.ivf_training_sample rationale):
-  the driver never receives more than ``max_train_rows`` rows regardless of
+  the driver never receives more than ``MAX_TRAIN_ROWS`` rows regardless of
   corpus size.
 - **Scoring is distributed and vectorized**: the fitted forest (a few
   hundred KB of numpy arrays) rides to executors broadcast-by-closure; a
@@ -131,11 +131,15 @@ def _build_tree(
     )
 
 
+#: driver-side rows the iForest and GBM fits train on
+MAX_TRAIN_ROWS = 4096
+
+
 def training_sample(
     df: DataFrame,
     id_col: str,
     feature_cols: list[str],
-    max_train_rows: int = 4096,
+    max_train_rows: int,
 ) -> np.ndarray:
     """Deterministic hash-threshold sample of the feature matrix, HARD-capped
     at ``max_train_rows`` driver-side rows (same bound contract as
@@ -160,22 +164,20 @@ def train_iforest(
     id_col: str,
     feature_cols: list[str],
     n_trees: int = 100,
-    max_depth: int = 10,
-    psi: int = 256,
-    max_train_rows: int = 4096,
     seed: int = 42,
 ) -> IsolationForest:
-    """Fit on a capped sample; each tree subsamples ψ rows (paper default
-    256; reference jar numTrees=100 / maxDepth=10, anomaly_model.py:160-176)."""
-    sample = training_sample(df, id_col, feature_cols, max_train_rows)
+    """Fit on a ``MAX_TRAIN_ROWS``-capped sample; each tree subsamples
+    ψ = 256 rows (the paper default) and grows at most 10 levels
+    (reference jar numTrees=100 / maxDepth=10, anomaly_model.py:160-176)."""
+    sample = training_sample(df, id_col, feature_cols, MAX_TRAIN_ROWS)
     if len(sample) < 2:
         raise ValueError(f"training sample has {len(sample)} rows < 2")
     rng = np.random.default_rng(seed)
-    psi = min(psi, len(sample))
+    psi = min(256, len(sample))
     feats, thrs, lefts, rights, sizes = [], [], [], [], []
     for _ in range(n_trees):
         rows = rng.choice(len(sample), size=psi, replace=False)
-        f, t, l, r, s = _build_tree(rng, sample[rows], max_depth)
+        f, t, l, r, s = _build_tree(rng, sample[rows], 10)
         feats.append(f)
         thrs.append(t)
         lefts.append(l)

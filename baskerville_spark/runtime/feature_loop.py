@@ -38,22 +38,20 @@ Scale notes:
   runtime/runner.py does this for verdicts).
 - ``streaming/stateful.py`` is the alternative when per-key state fits
   the applyInPandasWithState model; this loop is the one that matches
-  the reference's cache semantics exactly (TTL expiry included).
+  the reference's cache semantics exactly.
 """
 
 from __future__ import annotations
 
-import time
 from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from baskerville_spark.functions.features import (
     UpdateSpec,
     update_feature_vector,
 )
-from baskerville_spark.runtime.state import StateStore, expire_state
+from baskerville_spark.runtime.state import StateStore
 
 
 def refresh_feature_cache(
@@ -62,41 +60,28 @@ def refresh_feature_cache(
     spark: SparkSession,
     keys: list[str],
     specs: list[UpdateSpec],
-    square_variance: bool = False,
-    ttl_s: int | None = None,
-    now_epoch_s: float | None = None,
-    updated_at_col: str = "updated_at",
 ) -> DataFrame:
     """Merge one batch's fresh feature vectors into the persisted cache
     and atomically republish it. Returns the new cache DataFrame.
 
     ``fresh`` must carry ``keys`` + every column named in ``specs``.
-    Untouched cache keys pass through unchanged; TTL-expired ones are
-    dropped first when ``ttl_s`` is set (cache_expire_time,
-    reference config.py:363-368 / request_set_cache.py:404-411).
-    Defaults to the textbook pooled variance (``square_variance=False``)
-    — the incremental==batch invariant below holds only for it; pass
-    ``True`` for reference-verbatim merges.
+    Untouched cache keys pass through unchanged. Variances merge as the
+    textbook pooled variance (``square_variance=False``) — the
+    incremental==batch invariant holds only for it.
     """
-    now = time.time() if now_epoch_s is None else now_epoch_s
-    fresh = fresh.withColumn(
-        updated_at_col, F.lit(int(now)).cast("timestamp")
-    )
     past = store.read(spark)
-    if past is not None and ttl_s is not None:
-        past = expire_state(past, now, ttl_s, updated_at_col)
     if past is None:
         new_state = fresh
     else:
         merged = update_feature_vector(
-            fresh.drop(updated_at_col),
-            past.drop(updated_at_col),
+            fresh,
+            past,
             keys,
             specs,
-            square_variance=square_variance,
+            square_variance=False,
             round_dp=None,
             broadcast_past=False,
-        ).withColumn(updated_at_col, F.lit(int(now)).cast("timestamp"))
+        )
         untouched = past.join(
             fresh.select(*keys), on=keys, how="left_anti"
         )
@@ -126,11 +111,8 @@ def run_feature_loop(
     specs: list[UpdateSpec],
     vector_fn: Callable[[DataFrame], DataFrame],
     checkpoint_dir: str,
-    max_files_per_trigger: int = 1,
-    square_variance: bool = False,
-    ttl_s: int | None = None,
 ):
-    """Structured-Streaming form: file-per-micro-batch source (the same
+    """Structured-Streaming form: one-file-per-micro-batch source (the same
     broker-free stand-in q45 uses — on a cluster only the source line
     changes to Kafka), ``vector_fn`` = the GenerateFeatures stage,
     ``refresh_feature_cache`` = the RefreshCache stage.
@@ -140,19 +122,11 @@ def run_feature_loop(
 
     def _batch(batch_df: DataFrame, _batch_id: int) -> None:
         fresh = vector_fn(batch_df)
-        refresh_feature_cache(
-            fresh,
-            store,
-            spark,
-            keys,
-            specs,
-            square_variance=square_variance,
-            ttl_s=ttl_s,
-        )
+        refresh_feature_cache(fresh, store, spark, keys, specs)
 
     return (
         spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
+        .option("maxFilesPerTrigger", 1)
         .parquet(source_dir)
         .writeStream.foreachBatch(_batch)
         .option("checkpointLocation", checkpoint_dir)

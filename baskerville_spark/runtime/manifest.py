@@ -122,9 +122,9 @@ def commit_partition(
     n_rows: int,
     n_violations: int,
     started_at: datetime,
-    attempt: int = 1,
 ) -> None:
-    """Atomically record one finished partition."""
+    """Atomically record one finished partition (``attempt`` 1: a retry
+    rewrites the same mark)."""
     path = _local_dir(path)
     os.makedirs(path, exist_ok=True)
     now = datetime.now(timezone.utc)
@@ -133,7 +133,7 @@ def commit_partition(
             {
                 "part_id": part_id,
                 "status": "done",
-                "attempt": attempt,
+                "attempt": 1,
                 "n_rows": n_rows,
                 "n_violations": n_violations,
                 "started_at": started_at,

@@ -37,37 +37,18 @@ def observe_violations(violations: DataFrame) -> tuple[DataFrame, Observation]:
 # string and stays environment-bound, like the connector jars.
 
 
-def render_prometheus(
-    metrics: dict,
-    namespace: str = "baskerville",
-    labels: dict | None = None,
-    metric_type: str = "gauge",
-) -> str:
-    """Render ``{name: number}`` as Prometheus exposition text.
+def render_prometheus(metrics: dict) -> str:
+    """Render ``{name: number}`` as Prometheus gauges in exposition text.
 
-    Names are prefixed with ``namespace_`` and sanitized to the metric-name
-    grammar; label values get the spec's escaping (backslash, quote,
-    newline). Non-numeric / None values are skipped — observe() can yield
-    NULL aggregates on empty frames, and a scrape endpoint must never 500
-    because a batch was empty.
+    Names are prefixed with ``baskerville_`` and sanitized to the
+    metric-name grammar. Non-numeric / None values are skipped — observe()
+    can yield NULL aggregates on empty frames, and a scrape endpoint must
+    never 500 because a batch was empty.
     """
     import math
     import numbers
     import re
 
-    label_str = ""
-    if labels:
-        parts = []
-        for k, v in sorted(labels.items()):
-            lv = (
-                str(v)
-                .replace("\\", r"\\")
-                .replace('"', r"\"")
-                .replace("\n", r"\n")
-            )
-            lk = re.sub(r"[^a-zA-Z0-9_]", "_", str(k))
-            parts.append(f'{lk}="{lv}"')
-        label_str = "{" + ",".join(parts) + "}"
     lines = []
     for name in sorted(metrics):
         v = metrics[name]
@@ -78,9 +59,7 @@ def render_prometheus(
         v = v.item() if hasattr(v, "item") else v  # numpy scalar → python
         if isinstance(v, float) and (math.isnan(v) or math.isinf(v)):
             continue
-        mname = re.sub(r"[^a-zA-Z0-9_:]", "_", f"{namespace}_{name}")
-        if re.match(r"^[0-9]", mname):
-            mname = "_" + mname
-        lines.append(f"# TYPE {mname} {metric_type}")
-        lines.append(f"{mname}{label_str} {v}")
+        mname = re.sub(r"[^a-zA-Z0-9_:]", "_", f"baskerville_{name}")
+        lines.append(f"# TYPE {mname} gauge")
+        lines.append(f"{mname} {v}")
     return "\n".join(lines) + ("\n" if lines else "")

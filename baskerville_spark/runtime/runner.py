@@ -339,6 +339,9 @@ def run_resumable(
     """
     cfg = cfg or ValidationConfig()
     started = datetime.now(timezone.utc)
+    # commits write local files: refuse a remote manifest before any read,
+    # not after every partition is validated and every sink written
+    manifest_mod._local_dir(manifest_path)
 
     clips = spark.read.parquet(clips_path)
     all_parts = _partition_values(clips)

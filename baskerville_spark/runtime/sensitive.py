@@ -10,13 +10,14 @@ prediction service never sees IPs or hostnames.
 
 Here the stash is a :class:`~baskerville_spark.runtime.state.StateStore`
 (the same versioned-parquet + atomic-pointer store the feature cache
-uses; Redis's ``ttl`` option maps to ``expire_state`` on read, its
-``key.column`` to ``keys``). On a cluster the stash write is one line —
+uses; Redis's ``key.column`` maps to ``keys``). No caller sets a TTL, so
+the stash keeps every key until a later batch rewrites it. On a cluster
+the stash write is one line —
 the kafka_shaped sink or a Redis writer — with identical split/merge
 semantics.
 
-Scale: the merge is an equi-join on the uuid keys; the sensitive side is
-bounded by TTL x ingest rate, the prediction side by the batch — both
+Scale: the merge is an equi-join on the uuid keys; the sensitive side
+grows with the distinct keys stashed, the prediction side with the batch — both
 narrow (no payloads). The count-mismatch check costs two count() jobs
 exactly like the reference's; callers that cannot afford them at 10^12
 rows can skip with ``report=False`` (the reference always pays them).
@@ -24,13 +25,12 @@ rows can skip with ``report=False`` (the reference always pays them).
 
 from __future__ import annotations
 
-import time
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from baskerville_spark.runtime.state import StateStore, expire_state
+from baskerville_spark.runtime.state import StateStore
 
 
 def split_sensitive(
@@ -51,31 +51,20 @@ def cache_sensitive(
     store: StateStore,
     keys: list[str],
     sensitive_cols: list[str],
-    ttl_s: int | None = None,
-    now_epoch_s: float | None = None,
-    updated_at_col: str = "updated_at",
-    spark: SparkSession | None = None,
 ) -> DataFrame:
-    """Stash the sensitive slice (timestamped for TTL expiry) and return
-    the anonymized frame for the prediction leg.
+    """Stash the sensitive slice and return the anonymized frame for the
+    prediction leg.
 
     The stash ACCUMULATES across batches, per key — a Redis SET per uuid
     does the same — so predictions lagging a batch or three behind
     (the reference's explicit merge-loss scenario, tasks.py:1411-1420)
     still find their rows. Each write keeps: this batch's rows, plus every
-    prior key this batch didn't touch and TTL hasn't evicted. The stash is
-    therefore bounded by TTL x ingest rate even though each version is a
-    full rewrite (Iceberg: MERGE INTO; Redis: per-key ttl).
+    prior key this batch didn't touch; each version is a full rewrite
+    (Iceberg: MERGE INTO).
     """
-    now = time.time() if now_epoch_s is None else now_epoch_s
-    anonymized, sensitive = split_sensitive(df, keys, sensitive_cols)
-    fresh = sensitive.withColumn(
-        updated_at_col, F.lit(int(now)).cast("timestamp")
-    )
-    prior = store.read(spark or df.sparkSession)
+    anonymized, fresh = split_sensitive(df, keys, sensitive_cols)
+    prior = store.read(df.sparkSession)
     if prior is not None:
-        if ttl_s is not None:
-            prior = expire_state(prior, now, ttl_s, updated_at_col)
         untouched = prior.join(fresh.select(*keys), on=keys, how="left_anti")
         fresh = fresh.unionByName(untouched)
     # materialize before the pointer flip: the plan reads the CURRENT
@@ -102,25 +91,16 @@ def merge_sensitive(
     store: StateStore,
     spark: SparkSession,
     keys: list[str],
-    ttl_s: int | None = None,
-    now_epoch_s: float | None = None,
-    updated_at_col: str = "updated_at",
     report: bool = True,
 ) -> tuple[DataFrame, MergeReport | None]:
     """Inner-join predictions back onto their stashed sensitive rows
     (tasks.py:1405-1408). Returns (merged, report); ``report.lost > 0``
     reproduces the reference's merge-loss warning (tasks.py:1411-1420) as
-    data instead of log noise. TTL-expired stash rows drop before the
-    join, exactly like Redis's ttl option would have evicted them."""
+    data instead of log noise."""
     stash = store.read(spark)
     if stash is None:
         raise ValueError("no sensitive stash has been written")
-    if ttl_s is not None:
-        now = time.time() if now_epoch_s is None else now_epoch_s
-        stash = expire_state(stash, now, ttl_s, updated_at_col)
-    merged = predictions.join(
-        stash.drop(updated_at_col), on=keys, how="inner"
-    )
+    merged = predictions.join(stash, on=keys, how="inner")
     rep = None
     if report:
         rep = MergeReport(before=predictions.count(), after=merged.count())

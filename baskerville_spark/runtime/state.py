@@ -1,13 +1,11 @@
 """Incremental state cache: the reference's two-layer request-set cache
-rebuilt as a declarative upsert + TTL expiry.
+rebuilt as a declarative upsert.
 
 Reference semantics (src/baskerville/models/request_set_cache.py):
 - enrich: batch LEFT-joins the cache on (target, ip), null-coalescing
   duplicate columns (207-251)
 - upsert: FULL_OUTER join on keys, per-column when(new.isNotNull(), new)
   .otherwise(old) (370-400)
-- TTL expiry: updated_at >= now - expire_seconds (404-411), default 86400 s
-  (config.py:363-368)
 - persistence: parquet with A/B file alternation for atomicity (62-97) —
   here: versioned directories + current-pointer file (same idea, explicit);
   on Iceberg this is MERGE INTO + snapshot commit.
@@ -27,15 +25,11 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-DEFAULT_TTL_S = 86_400  # reference default cache_expire_time (config.py:363-368)
-
-
 def enrich_with_state(
     batch: DataFrame,
     state: DataFrame,
     keys: list[str],
     state_cols: list[str],
-    prefix: str = "old_",
 ) -> DataFrame:
     """LEFT join prior state onto the batch (request_set_cache.py:207-251).
 
@@ -43,7 +37,7 @@ def enrich_with_state(
     reference both the fresh and prior value.
     """
     renamed = state.select(
-        *keys, *[F.col(c).alias(f"{prefix}{c}") for c in state_cols]
+        *keys, *[F.col(c).alias(f"old_{c}") for c in state_cols]
     )
     return batch.join(renamed, on=keys, how="left")
 
@@ -53,7 +47,6 @@ def upsert_state(
     updates: DataFrame,
     keys: list[str],
     value_cols: list[str],
-    updated_at_col: str = "updated_at",
 ) -> DataFrame:
     """FULL_OUTER merge with PER-COLUMN null-coalescing: each column takes
     the update's value when non-null, else the prior state's.
@@ -72,11 +65,11 @@ def upsert_state(
     write a sentinel, not NULL. On Iceberg: MERGE INTO."""
     s = state.select(
         *[F.col(k).alias(f"__s_{k}") for k in keys],
-        *[F.col(c).alias(f"__s_{c}") for c in value_cols + [updated_at_col]],
+        *[F.col(c).alias(f"__s_{c}") for c in value_cols + ["updated_at"]],
     )
     u = updates.select(
         *[F.col(k).alias(f"__u_{k}") for k in keys],
-        *[F.col(c).alias(f"__u_{c}") for c in value_cols + [updated_at_col]],
+        *[F.col(c).alias(f"__u_{c}") for c in value_cols + ["updated_at"]],
     )
     cond = None
     for k in keys:
@@ -86,24 +79,11 @@ def upsert_state(
     out_cols = [
         F.coalesce(F.col(f"__u_{k}"), F.col(f"__s_{k}")).alias(k) for k in keys
     ]
-    for c in value_cols + [updated_at_col]:
+    for c in value_cols + ["updated_at"]:
         out_cols.append(
             F.coalesce(F.col(f"__u_{c}"), F.col(f"__s_{c}")).alias(c)
         )
     return joined.select(*out_cols)
-
-
-def expire_state(
-    state: DataFrame,
-    now_epoch_s: float,
-    ttl_s: int = DEFAULT_TTL_S,
-    updated_at_col: str = "updated_at",
-) -> DataFrame:
-    """TTL filter (request_set_cache.py:404-411)."""
-    cutoff = now_epoch_s - ttl_s
-    return state.where(
-        F.unix_timestamp(F.col(updated_at_col).cast("timestamp")) >= F.lit(cutoff)
-    )
 
 
 class StateStore:

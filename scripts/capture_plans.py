@@ -12,8 +12,10 @@ from __future__ import annotations
 
 import os
 import sys
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+ROOT = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(ROOT))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 CPUS = os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count() or 8))
@@ -33,7 +35,7 @@ def main() -> None:
     )
     spark.sparkContext.setLogLevel("ERROR")
     qs = entry_mod.queries()
-    out_dir = "/root/repo/plans/r06"
+    out_dir = str(ROOT / "plans" / "r06")
     os.makedirs(out_dir, exist_ok=True)
     for name in names:
         df = qs[name](spark, SF_DIR)

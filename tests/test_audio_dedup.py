@@ -672,22 +672,6 @@ def test_audio_channel_balance(spark):
         audio_channel_balance(no_codec)
 
 
-def test_audio_channel_balance_rejects_mono(spark):
-    """n_channels < 2 must fail loudly at call time, not as an opaque
-    IndexError inside the Arrow worker (r05 review)."""
-    import pytest
-
-    from baskerville_spark.functions.audio_quality import audio_channel_balance
-
-    pcm = audio.encode(np.full(64, 1000, dtype=np.int16), "pcm_s16le")
-    df = spark.createDataFrame(
-        [("c1", bytearray(pcm), "pcm_s16le")],
-        "clip_id string, bytes binary, codec string",
-    )
-    with pytest.raises(ValueError, match="n_channels >= 2"):
-        audio_channel_balance(df, n_channels=1)
-
-
 def test_conflicting_label_groups(spark):
     from baskerville_spark.functions.audio_dedup import conflicting_label_groups
 

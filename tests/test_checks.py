@@ -34,9 +34,10 @@ def test_salted_equals_naive_uniqueness(t1_clips):
     assert salted == naive and len(salted) > 0
 
 
-def test_duplicate_exemplars_bounded_under_skew(spark):
+def test_duplicate_exemplars_bounded_under_skew(spark, monkeypatch):
     from pyspark.sql import functions as F
 
+    from baskerville_spark.checks import uniqueness
     from baskerville_spark.checks.uniqueness import duplicate_exemplars
 
     # one key duplicated 50k times + unique tail
@@ -46,12 +47,12 @@ def test_duplicate_exemplars_bounded_under_skew(spark):
         ).alias("clip_id"),
         F.col("id").alias("row_id"),
     )
-    # hot_threshold below the planted 50k dup_count forces the three-level
+    # HOT_THRESHOLD below the planted 50k dup_count forces the three-level
     # salted branch (the adaptive default would take the cold single-shuffle
     # path at this size — both must agree exactly)
-    rows = duplicate_exemplars(
-        df, key="clip_id", id_col="row_id", k=5, hot_threshold=10_000
-    ).collect()
+    monkeypatch.setattr(uniqueness, "HOT_THRESHOLD", 10_000)
+    rows = duplicate_exemplars(df, key="clip_id", id_col="row_id", k=5).collect()
+    monkeypatch.undo()
     assert len(rows) == 1
     r = rows[0]
     assert r["dup_count"] == 50_000
@@ -89,7 +90,7 @@ def test_column_stats_values(spark):
 
 def test_approx_distinct_within_rsd(t1_clips):
     st = column_stats(
-        t1_clips, part_col=None, numeric_cols=[], other_cols=["clip_id"], rsd=0.02
+        t1_clips, part_col=None, numeric_cols=[], other_cols=["clip_id"]
     ).collect()[0]
     exact = t1_clips.select("clip_id").distinct().count()
     assert abs(st["approx_distinct"] - exact) / exact < 0.1
@@ -116,7 +117,9 @@ def test_approx_distinct_all_types_within_rsd(spark):
     cols = [c for c in df.columns if c != "part_id"]
     got = {
         (r["part_id"], r["column_name"]): r["approx_distinct"]
-        for r in column_stats(df, rsd=0.02).collect()
+        for r in column_stats(
+            df, numeric_cols=["d", "f", "dec", "sm", "z"], other_cols=["dt", "ts", "b"]
+        ).collect()
     }
     exact = df.groupBy("part_id").agg(
         *[F.countDistinct(c).alias(c) for c in cols]
@@ -130,21 +133,20 @@ def test_approx_distinct_all_types_within_rsd(spark):
                 assert est == n, (r["part_id"], c, est, n)
 
 
-def test_column_stats_and_stats_state_share_one_sketch(spark):
-    """rsd 0.02 maps to lg_k 12, so column_stats and stats_state build the
-    same DataSketches HLL and report identical estimates per partition."""
+def test_column_stats_and_stats_state_share_one_sketch(spark, monkeypatch):
+    """At equal lg_k, column_stats and stats_state build the same
+    DataSketches HLL and report identical estimates per partition."""
+    from baskerville_spark.checks import stats
     from baskerville_spark.checks import stats_state as SS
 
-    assert SS.lg_k_for_rsd(0.02) == 12
+    monkeypatch.setattr(SS, "DEFAULT_LG_K", stats.HLL_LG_K)
     df = _typed_frame(spark)
     cols = ["d", "dec", "ts", "sm"]
     cs = {
         (r["part_id"], r["column_name"]): r["approx_distinct"]
-        for r in column_stats(df, numeric_cols=[], other_cols=cols, rsd=0.02).collect()
+        for r in column_stats(df, numeric_cols=[], other_cols=cols).collect()
     }
-    ss = SS.finalize_stats(
-        SS.stats_state(df, ["part_id"], [], cols, lg_k=12), cols
-    ).collect()
+    ss = SS.finalize_stats(SS.stats_state(df, ["part_id"], [], cols), cols).collect()
     assert len(ss) == 3
     for r in ss:
         for c in cols:
@@ -335,10 +337,11 @@ def test_drift_verdicts_single_scan_plan(t1_clips):
     assert scans == 1, plan[:2000]
 
 
-def test_duplicate_exemplars_reports_null_keys(spark):
+def test_duplicate_exemplars_reports_null_keys(spark, monkeypatch):
     """A duplicated NULL key is a data-quality violation this check must
     report: groupBy treats NULL as one group, and the count-first semi
     join is null-safe (a plain equi semi-join would silently drop it)."""
+    from baskerville_spark.checks import uniqueness
     from baskerville_spark.checks.uniqueness import duplicate_exemplars
 
     df = spark.createDataFrame(
@@ -348,10 +351,11 @@ def test_duplicate_exemplars_reports_null_keys(spark):
     # BOTH adaptive branches must report the NULL group: the cold path via
     # plain groupBy, the hot path via the null-safe semi join
     for thr in (200_000, 1):
+        monkeypatch.setattr(uniqueness, "HOT_THRESHOLD", thr)
         rows = {
             r["clip_id"]: r
             for r in duplicate_exemplars(
-                df, key="clip_id", id_col="row_id", k=5, hot_threshold=thr
+                df, key="clip_id", id_col="row_id", k=5
             ).collect()
         }
         assert rows[None]["dup_count"] == 3
@@ -602,13 +606,13 @@ def test_histogram_state_merge_equals_direct(spark):
     hc = {"v": _EDGES}
     parts = [df.filter(f"id % 4 = {i}") for i in range(4)]
     states = parts[0].sparkSession.createDataFrame([], "x int")
-    st = SS.histogram_state(parts[0], ["part"], hc)
+    st = SS.stats_state(parts[0], ["part"], [], hist_cols=hc)
     for p in parts[1:]:
-        st = st.unionByName(SS.histogram_state(p, ["part"], hc))
+        st = st.unionByName(SS.stats_state(p, ["part"], [], hist_cols=hc))
     merged = {r["part"]: r for r in
-              SS.merge_histogram_states(st, ["part"], hc).collect()}
+              SS.merge_stats_states(st, ["part"], [], hist_cols=hc).collect()}
     direct = {r["part"]: r for r in
-              SS.histogram_state(df, ["part"], hc).collect()}
+              SS.stats_state(df, ["part"], [], hist_cols=hc).collect()}
     assert set(merged) == set(direct) == {0, 1, 2}
     for p in direct:
         assert merged[p]["v_hist"] == direct[p]["v_hist"]
@@ -626,8 +630,8 @@ def test_histogram_quantile_bounds_bracket_exact(spark):
     rows = [(i % 2, float((i * 37) % 2000)) for i in range(3000)]
     df = spark.createDataFrame(rows, "part int, v double")
     hc = {"v": _EDGES}
-    st = SS.merge_histogram_states(
-        SS.histogram_state(df, ["part"], hc), ["part"], hc
+    st = SS.merge_stats_states(
+        SS.stats_state(df, ["part"], [], hist_cols=hc), ["part"], [], hist_cols=hc
     )
     import math
     for q in (0.1, 0.5, 0.9):
@@ -654,9 +658,9 @@ def test_histogram_psi_matches_driver_fold(spark):
     df_b = spark.createDataFrame(
         [(0, float(v)) for v in (150, 500, 500, 500, 2000)], "part int, v double")
     hc = {"v": _EDGES}
-    sa = SS.histogram_state(df_a, ["part"], hc).select(
+    sa = SS.stats_state(df_a, ["part"], [], hist_cols=hc).select(
         "part", F.col("v_hist").alias("a"))
-    sb = SS.histogram_state(df_b, ["part"], hc).select(
+    sb = SS.stats_state(df_b, ["part"], [], hist_cols=hc).select(
         "part", F.col("v_hist").alias("b"))
     j = sa.join(sb, "part")
     got = j.select(
@@ -675,7 +679,7 @@ def test_histogram_state_single_pass_plan(spark):
 
     df = spark.range(1000).select(
         (F.col("id") % 2).alias("part"), F.col("id").alias("v"))
-    st = SS.histogram_state(df, ["part"], {"v": _EDGES})
+    st = SS.stats_state(df, ["part"], [], hist_cols={"v": _EDGES})
     plan = st._jdf.queryExecution().executedPlan().toString()
     assert plan.count("Exchange hashpartitioning") == 1, plan[:2000]
     assert "partial_sum" in plan or "partial sum" in plan.lower(), plan[:2000]
@@ -779,9 +783,9 @@ def test_histogram_ks_matches_driver_fold(spark):
     df_b = spark.createDataFrame(
         [(0, float(v)) for v in (150, 500, 500, 500, 2000)], "part int, v double")
     hc = {"v": _EDGES}
-    sa = SS.histogram_state(df_a, ["part"], hc).select(
+    sa = SS.stats_state(df_a, ["part"], [], hist_cols=hc).select(
         "part", F.col("v_hist").alias("a"))
-    sb = SS.histogram_state(df_b, ["part"], hc).select(
+    sb = SS.stats_state(df_b, ["part"], [], hist_cols=hc).select(
         "part", F.col("v_hist").alias("b"))
     got = sa.join(sb, "part").select(
         SS.histogram_ks(F.col("a"), F.col("b"), len(_EDGES) + 1).alias("ks"),
@@ -1073,7 +1077,7 @@ def test_metric_history_melt_from_column_stats(spark, t1_clips):
     numeric column carries min/max, a non-numeric one leaves them NULL
     (a metric that does not exist is not a zero), and the null rate is a
     fraction of each partition's rows."""
-    stats = column_stats(t1_clips.select("part_id", "sr_hz", "codec")).collect()
+    stats = column_stats(t1_clips, numeric_cols=["sr_hz"], other_cols=["codec"]).collect()
     by_col = {}
     for r in stats:
         by_col.setdefault(r["column_name"], []).append(r)
@@ -1121,29 +1125,6 @@ def test_anomaly_arithmetic_ramp_stays_in_band(spark):
     hist = _hist_rows(spark, [float(100 + 5 * i) for i in range(10)])
     rep = detect_metric_anomalies(hist).collect()
     assert not any(r["anomaly"] for r in rep)
-
-
-def test_anomaly_lookback_and_current_run_filter(spark):
-    from baskerville_spark.checks.history import detect_metric_anomalies
-
-    # ancient regime change outside the lookback window must not poison the
-    # trailing stats: runs 0-2 at 1000, runs 3-7 at 100, run 8 at 100.
-    series = [1000.0, 1000.0, 1000.0, 100.0, 100.0, 100.0, 100.0, 100.0, 100.0]
-    hist = _hist_rows(spark, series)
-    unbounded = {
-        r["run_id"]: r for r in detect_metric_anomalies(hist).collect()
-    }
-    bounded = {
-        r["run_id"]: r
-        for r in detect_metric_anomalies(hist, lookback=4).collect()
-    }
-    # with full history, run 8's trailing mean still carries the old regime
-    assert unbounded[8]["trailing_mean"] > 100.0
-    # with lookback=4, run 8 sees only the new regime — flat, no anomaly
-    assert bounded[8]["trailing_mean"] == 100.0
-    assert not bounded[8]["anomaly"]
-    only8 = detect_metric_anomalies(hist, current_run_id=8).collect()
-    assert [r["run_id"] for r in only8] == [8]
 
 
 def test_anomaly_series_are_independent_per_key(spark):

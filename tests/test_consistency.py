@@ -129,19 +129,18 @@ def test_decontaminate(spark):
 def test_pack_sequences_matches_serial_cumsum(spark):
     rows = [Row(doc_id=i, text=" ".join(["w"] * (3 + i % 7))) for i in range(40)]
     df = spark.createDataFrame(rows)
-    # multi-block path: 5 range blocks exercises the offset map
+    # multi-block path: the session's 4 range blocks exercise the offset map
+    assert spark.sparkContext.defaultParallelism > 1
     packed = {
         r["doc_id"]: (r["start_offset"], r["bin_id"])
-        for r in pack_sequences(df, bin_tokens=10, n_blocks=5).collect()
+        for r in pack_sequences(df, bin_tokens=10).collect()
     }
     acc = 0
     for i in range(40):
         n = 3 + i % 7
         assert packed[i] == (acc, acc // 10), f"doc {i}"
         acc += n
-    summary = packed_bin_summary(
-        pack_sequences(df, bin_tokens=10, n_blocks=5)
-    ).collect()
+    summary = packed_bin_summary(pack_sequences(df, bin_tokens=10)).collect()
     assert sum(r["n_docs"] for r in summary) == 40
     assert sum(r["n_tokens"] for r in summary) == acc
 
@@ -241,7 +240,7 @@ def test_pack_sequences_plan_no_global_window(spark):
     from baskerville_spark.functions.packing import pack_sequences
 
     rows = [Row(doc_id=i, text="a b c") for i in range(100)]
-    packed = pack_sequences(spark.createDataFrame(rows), bin_tokens=10, n_blocks=4)
+    packed = pack_sequences(spark.createDataFrame(rows), bin_tokens=10)
     plan = packed._jdf.queryExecution().executedPlan().toString()
     assert "Window" in plan
     assert "SinglePartition" not in plan

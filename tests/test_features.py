@@ -73,23 +73,6 @@ def test_vector_counts_and_defaults(tiny_events):
     assert u1["unique_type_total"] == 2 and u2["unique_type_total"] == 1
 
 
-def test_hll_vector_single_exchange(tiny_events):
-    """exact_distinct=False is the 10^12-row plan: windows + grouping all
-    reuse ONE hash exchange on the group key; no multi-distinct Expand."""
-    df = feature_vector(tiny_events, exact_distinct=False)
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert plan.count("Exchange hashpartitioning") == 1
-    assert "Expand" not in plan
-    # exact form: Expand present, 3 exchanges (documented trade)
-    plan_exact = (
-        feature_vector(tiny_events, exact_distinct=True)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    assert "Expand" in plan_exact
-
-
 def _mini_vectors(spark, a_vals, b_vals):
     """Two single-key 'vectors' with count/mean/var/max/min computed in
     plain Python, returned as 1-row DataFrames."""
@@ -278,7 +261,7 @@ def test_feature_loop_incremental_equals_batch(spark, tmp_path):
 
     got = {
         r["user_id"]: r.asDict()
-        for r in store.read(spark).drop("updated_at").collect()
+        for r in store.read(spark).collect()
     }
     expected = {
         r["user_id"]: r.asDict()

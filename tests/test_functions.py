@@ -118,7 +118,7 @@ def test_ivf_topk_matches_brute_force(spark):
     from baskerville_spark.functions.similarity import ivf_topk, train_ivf_centroids
 
     df = _vec_df(spark, n=120, dim=16)
-    cent = train_ivf_centroids(df, n_centroids=8, sample_mod=2, seed=11)
+    cent = train_ivf_centroids(df, n_centroids=8, sample_mod=2)
     assert cent.shape == (8, 16)
     q = [float(x) for x in df.where("vec_id = 0").first()["embedding"]]
     exact = [r["id"] for r in cosine_topk(df, q, k=5).collect()]
@@ -367,7 +367,7 @@ def test_ivf_probe_prunes_clusters(spark):
 
     # sample_mod coprime with k_clusters: an even mod would sample only the
     # even combs and leave half the clusters unseeded
-    cent = train_ivf_centroids(df, n_centroids=8, sample_mod=3, seed=42)
+    cent = train_ivf_centroids(df, n_centroids=8, sample_mod=3)
     q = [float(x) for x in rows[0][1]]
     exact = [r["id"] for r in cosine_topk(df, q, k=10).collect()]
     appr = [r["id"] for r in ivf_topk(df, q, cent, k=10, nprobe=2).collect()]
@@ -396,18 +396,16 @@ def test_ivf_training_sample_hard_cap(spark):
         ).alias("embedding"),
     )
     # sample_mod=2 would keep ~10k rows uncapped; the cap must win
-    sample = ivf_training_sample(
-        df, "vec_id", "embedding", sample_mod=2, max_train_rows=64
-    )
+    sample = ivf_training_sample(df, sample_mod=2, max_train_rows=64)
     assert sample.count() <= 64
     # threshold path (cap not binding) is deterministic for a fixed corpus
-    a = ivf_training_sample(df, "vec_id", "embedding", sample_mod=50, max_train_rows=4096)
-    b = ivf_training_sample(df, "vec_id", "embedding", sample_mod=50, max_train_rows=4096)
+    a = ivf_training_sample(df, sample_mod=50, max_train_rows=4096)
+    b = ivf_training_sample(df, sample_mod=50, max_train_rows=4096)
     assert sorted(map(tuple, (r[0] for r in a.collect()))) == sorted(
         map(tuple, (r[0] for r in b.collect()))
     )
     # end-to-end: training under the cap still yields the requested shape
-    cent = train_ivf_centroids(df, n_centroids=4, sample_mod=2, max_train_rows=64)
+    cent = train_ivf_centroids(df, n_centroids=4, sample_mod=2)
     assert cent.shape == (4, 2)
 
 
@@ -697,26 +695,24 @@ def test_train_val_test_split_disjoint_exhaustive(spark):
     # stability: same assignment regardless of partitioning
     re = df.repartition(7).select("doc_id", train_val_test_split("doc_id"))
     assert out.exceptAll(re).count() == 0 and re.exceptAll(out).count() == 0
-    with pytest.raises(ValueError):
-        train_val_test_split("doc_id", fracs=(0.5, 0.2), names=("a", "b", "c"))
 
 
 def test_split_edge_contracts(spark):
-    import pytest
+    """The split intervals are [0, 800), [800, 900) and [900, 1000) of the
+    md5 hash bucket: each edge bucket lands on the documented side."""
     from pyspark.sql import functions as F
 
-    from baskerville_spark.functions.sampling import train_val_test_split
+    from baskerville_spark.functions.sampling import hash_bucket, train_val_test_split
 
-    df = spark.range(100).select(F.col("id").alias("doc_id"))
-    # single split: constant assignment, no hash needed
-    one = df.select(train_val_test_split("doc_id", fracs=(1.0,), names=("all",)))
-    assert {r["split"] for r in one.collect()} == {"all"}
-    # a frac too small for the bucket resolution must raise, not go empty
-    with pytest.raises(ValueError, match="strictly increasing"):
-        train_val_test_split(
-            "doc_id", fracs=(0.0004, 0.0004, 0.9992), names=("a", "b", "c"),
-            n_buckets=1000,
-        )
+    df = spark.range(5000).select(F.col("id").alias("doc_id"))
+    rows = df.select(
+        hash_bucket(F.col("doc_id"), 1000).alias("b"), train_val_test_split("doc_id")
+    ).collect()
+    for r in rows:
+        want = "train" if r["b"] < 800 else "val" if r["b"] < 900 else "test"
+        assert r["split"] == want, (r["b"], r["split"])
+    # 5000 ids reach the buckets on both sides of each edge
+    assert {799, 800, 899, 900} <= {r["b"] for r in rows}
 
 
 def test_keep_canonical_passes_through_unmapped_docs(spark):
@@ -837,16 +833,6 @@ def test_keep_canonical_string_ids(spark):
     )
     survivors, _ = keep_canonical(docs, clusters, F.length("text"))
     assert sorted(r.doc_id for r in survivors.collect()) == ["clip_a", "clip_c"]
-
-
-def test_plan_compaction_zero_threshold_means_compact_nothing(spark):
-    from pyspark.sql import Row
-
-    from baskerville_spark.functions.layout import plan_compaction
-
-    files = spark.createDataFrame([Row(partition=0, file_id=1, bytes=10)])
-    out = plan_compaction(files, target_bytes=40, small_threshold=0).collect()[0]
-    assert out.is_small is False and out.compaction_group is None
 
 
 def test_gap_fill(spark):

@@ -12,6 +12,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from baskerville_spark.functions import graph
 from baskerville_spark.functions.graph import (
     connected_components,
     connected_components_bigstar,
@@ -24,7 +25,7 @@ def _labels(df) -> dict[int, int]:
     return {r["id"]: r["cluster_id"] for r in df.collect()}
 
 
-def test_path_graph_needs_multiple_rounds(spark):
+def test_path_graph_needs_multiple_rounds(spark, monkeypatch):
     # Path 9-7-5-3-1 with the min at the far end: label 1 must walk the
     # path hop by hop, so convergence takes >1 round — the regime the
     # q65 star-edge fixture (diameter 2) never enters.
@@ -32,9 +33,12 @@ def test_path_graph_needs_multiple_rounds(spark):
     edges = spark.createDataFrame(
         [(9, 7), (7, 5), (5, 3), (3, 1)], ["src", "dst"]
     )
-    out, iters = connected_components(verts, edges, return_iters=True)
-    assert _labels(out) == {1: 1, 3: 1, 5: 1, 7: 1, 9: 1}
-    assert iters > 2  # 4 hops of propagation + 1 confirming round
+    # exactly 4 hops of propagation + 1 confirming round
+    monkeypatch.setattr(graph, "LABEL_MAX_ITERS", 5)
+    assert _labels(connected_components(verts, edges)) == {1: 1, 3: 1, 5: 1, 7: 1, 9: 1}
+    monkeypatch.setattr(graph, "LABEL_MAX_ITERS", 4)
+    with pytest.raises(RuntimeError, match="did not converge in 4 rounds"):
+        connected_components(verts, edges)
 
 
 def test_two_components_and_isolated_vertex(spark):
@@ -65,16 +69,17 @@ def test_star_edges_match_clique_connectivity(spark):
     )
 
 
-def test_nonconvergence_raises(spark):
+def test_nonconvergence_raises(spark, monkeypatch):
     verts = spark.createDataFrame([(9,), (7,), (5,), (3,), (1,)], ["id"])
     edges = spark.createDataFrame(
         [(9, 7), (7, 5), (5, 3), (3, 1)], ["src", "dst"]
     )
+    monkeypatch.setattr(graph, "LABEL_MAX_ITERS", 2)
     with pytest.raises(RuntimeError, match="did not converge"):
-        connected_components(verts, edges, max_iters=2)
+        connected_components(verts, edges)
 
 
-def test_bigstar_long_chain_converges_sublinearly(spark):
+def test_bigstar_long_chain_converges_sublinearly(spark, monkeypatch):
     # Diameter-100 path 0-1-2-...-100: min-label propagation needs ~100
     # rounds (it would exhaust its cap); the large-star/small-star
     # alternation must land the correct single component in O(log n)
@@ -84,12 +89,14 @@ def test_bigstar_long_chain_converges_sublinearly(spark):
     edges = spark.createDataFrame(
         [(i, i + 1) for i in range(n)], ["src", "dst"]
     )
-    out, iters = connected_components_bigstar(verts, edges, return_iters=True)
+    # ~log2(100) + slack rounds, nowhere near the diameter
+    monkeypatch.setattr(graph, "BIGSTAR_MAX_ITERS", 12)
+    out = connected_components_bigstar(verts, edges)
     assert _labels(out) == {i: 0 for i in range(n + 1)}
-    assert iters <= 12  # ~log2(100) + slack, nowhere near diameter
 
+    monkeypatch.setattr(graph, "LABEL_MAX_ITERS", 10)
     with pytest.raises(RuntimeError, match="did not converge"):
-        connected_components(verts, edges, max_iters=10)
+        connected_components(verts, edges)
 
 
 def test_bigstar_matches_label_on_mixed_graph(spark):
@@ -106,7 +113,7 @@ def test_bigstar_matches_label_on_mixed_graph(spark):
     assert b[9] == 5 and b[2] == 1 and b[3] == 3
 
 
-def test_seeded_labels_halve_rounds_same_answer(spark):
+def test_seeded_labels_halve_rounds_same_answer(spark, monkeypatch):
     # Chained buckets {1,5,9},{9,12},{12,15}: unseeded propagation walks
     # root-to-root; seeding each member with its min bucket root (the
     # dedup_clusters fast path) pre-folds round one, so convergence takes
@@ -117,18 +124,21 @@ def test_seeded_labels_halve_rounds_same_answer(spark):
     )
     verts = membership.select("id").distinct()
     edges = star_edges(membership)
-    plain, it_plain = connected_components(verts, edges, return_iters=True)
+    plain = connected_components(verts, edges)
     roots = membership.groupBy("bucket").agg(F.min("id").alias("__root"))
     seeds = (
         membership.join(roots, "bucket")
         .groupBy("id")
         .agg(F.min("__root").alias("label"))
     )
-    seeded, it_seeded = connected_components(
-        verts, edges, init_labels=seeds, return_iters=True
-    )
+    seeded = connected_components(verts, edges, init_labels=seeds)
     assert _labels(plain) == _labels(seeded) == {i: 1 for i in (1, 5, 9, 12, 15)}
-    assert it_seeded < it_plain
+    # plain propagation needs 4 rounds (3 moving + 1 confirming); seeding
+    # pre-folds the first, so 3 rounds suffice for it alone
+    monkeypatch.setattr(graph, "LABEL_MAX_ITERS", 3)
+    assert _labels(connected_components(verts, edges, init_labels=seeds)) == _labels(plain)
+    with pytest.raises(RuntimeError, match="did not converge"):
+        connected_components(verts, edges)
 
 
 def test_dedup_clusters_bigstar_dispatch(spark):

@@ -62,9 +62,7 @@ def test_iforest_null_features_score_null(spark):
         [(1, 0.1, 0.2), (2, None, 0.3), (3, 0.2, 0.1)],
         "id long, f1 double, f2 double",
     )
-    forest = train_iforest(
-        df.where("f1 IS NOT NULL"), "id", ["f1", "f2"], n_trees=10, psi=2
-    )
+    forest = train_iforest(df.where("f1 IS NOT NULL"), "id", ["f1", "f2"], n_trees=10)
     got = {r["id"]: r["anomaly_score"]
            for r in score_anomalies(df, forest, "id", ["f1", "f2"]).collect()}
     assert got[2] is None or np.isnan(got[2])
@@ -111,7 +109,7 @@ def test_gbm_deterministic_and_partition_invariant(spark):
 def test_classify_anomalies_dual_thresholds(spark):
     """tasks.py:1771-1795 parity: incident keys judged at the lower
     threshold, non-incident at the default; attack_prediction marks
-    incident membership; the incident set rides a broadcast join, not a
+    incident membership; the incident set rides a join, not a
     driver-collected isin literal."""
     from pyspark.sql import functions as F
 
@@ -124,7 +122,7 @@ def test_classify_anomalies_dual_thresholds(spark):
     incidents = spark.createDataFrame(
         [("a",), ("a",), ("d",)], "host string"  # dup exercises distinct
     )
-    out = classify_anomalies(scored, incidents, "host", broadcast_incidents=True)
+    out = classify_anomalies(scored, incidents, "host")
     got = {r["host"]: r.asDict() for r in out.collect()}
     # a: incident, 0.40 > 0.35 -> flagged; b: normal, 0.40 < 0.45 -> clean
     assert got["a"]["attack_prediction"] == 1 and got["a"]["prediction"] == 1

@@ -146,6 +146,9 @@ def test_connected_components_match_union_find(spark, edges, data):
     """Both CC algorithms vs a driver-side union-find oracle on random
     graphs (self-loops, duplicate and reversed edges, isolated vertices
     all allowed). Few examples: each is several Spark jobs."""
+    from unittest import mock
+
+    from baskerville_spark.functions import graph
     from baskerville_spark.functions.graph import (
         connected_components,
         connected_components_bigstar,
@@ -176,10 +179,12 @@ def test_connected_components_match_union_find(spark, edges, data):
     e = spark.createDataFrame(
         [(a, b) for a, b in edges] or [(0, 0)], ["src", "dst"]
     )
-    got_label = {
-        r["id"]: r["cluster_id"]
-        for r in connected_components(verts, e, max_iters=40).collect()
-    }
+    # a random path can outlast the default round cap; raise it here
+    with mock.patch.object(graph, "LABEL_MAX_ITERS", 40):
+        got_label = {
+            r["id"]: r["cluster_id"]
+            for r in connected_components(verts, e).collect()
+        }
     got_star = {
         r["id"]: r["cluster_id"]
         for r in connected_components_bigstar(verts, e).collect()

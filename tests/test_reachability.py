@@ -1,5 +1,6 @@
 """Every top-level def, class and module constant in ``baskerville_spark/``
-has a production caller.
+has a production caller, and every defaulted parameter of a public one is
+set by a production call.
 
 The roots are the entry points: the CLI (``baskerville_spark/main.py``), the
 gate table and driver API of ``__spark_entry__.py``, ``bench.py``,
@@ -13,6 +14,13 @@ with its tests.
 
 The walk over-approximates: a name bound by several imports in one module
 reaches all of them, and reaching a class reaches all of its methods.
+
+The parameter walk matches calls by callee name only: a defaulted parameter
+of a public function, public method or ``__init__`` (called by its class's
+name) counts as set when some call to that name in the package or a root
+file passes it by keyword or by position, or passes ``*args``/``**kwargs``.
+A parameter only tests set is a constant (or a module constant the test
+monkeypatches) unless ``ALLOWED_PARAMS`` names it with its reason.
 """
 
 import ast
@@ -25,6 +33,11 @@ PKG = "baskerville_spark"
 ALLOWED = {
     # The exposition form the validation-path trace spine is to publish.
     ("baskerville_spark.runtime.metrics", "render_prometheus"),
+}
+# Defaulted parameters no production call sets, each with its reason.
+ALLOWED_PARAMS = {
+    ("baskerville_spark.main", "main", "argv"):
+        "test seam: the CLI tests pass the argument list instead of sys.argv",
 }
 # Definitions an outside driver calls by name.
 DRIVER_API = {"__spark_entry__": ("entry", "queries", "oracle_sql")}
@@ -189,3 +202,108 @@ def test_every_package_definition_has_a_production_caller():
     assert not missing, "reached only from tests (delete, or wire into an entry point):\n" + "\n".join(
         f"  {m}.{d}" for m, d in missing
     )
+
+
+def _defaulted_params(tree):
+    """(qualname, callee name, parameter, position or None) of each
+    defaulted parameter of the module's public functions, public methods
+    and ``__init__``s; the position skips ``self``, and keyword-only
+    parameters have none."""
+    fns = []
+    for node in tree.body:
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+            if not node.name.startswith("_"):
+                fns.append((node.name, node.name, node, 0))
+        elif isinstance(node, ast.ClassDef) and not node.name.startswith("_"):
+            for m in node.body:
+                if isinstance(m, (ast.FunctionDef, ast.AsyncFunctionDef)) and (
+                    not m.name.startswith("_") or m.name == "__init__"
+                ):
+                    static = any(
+                        isinstance(d, ast.Name) and d.id == "staticmethod"
+                        for d in m.decorator_list
+                    )
+                    call = node.name if m.name == "__init__" else m.name
+                    fns.append((f"{node.name}.{m.name}", call, m, 0 if static else 1))
+    for qual, call, fn, skip in fns:
+        a = fn.args
+        pos = a.posonlyargs + a.args
+        for i in range(len(pos) - len(a.defaults), len(pos)):
+            yield qual, call, pos[i].arg, i - skip
+        for arg, default in zip(a.kwonlyargs, a.kw_defaults):
+            if default is not None:
+                yield qual, call, arg.arg, None
+
+
+def _calls(trees):
+    """Callee name -> (keywords passed, most positional arguments, whether
+    some call passes ``*args`` or ``**kwargs``)."""
+    seen = {}
+    for tree in trees:
+        for node in ast.walk(tree):
+            if not isinstance(node, ast.Call):
+                continue
+            f = node.func
+            name = f.id if isinstance(f, ast.Name) else getattr(f, "attr", None)
+            if name is None:
+                continue
+            kw, n_pos, star = seen.get(name, (set(), 0, False))
+            kw = kw | {k.arg for k in node.keywords if k.arg}
+            n_pos = max(n_pos, sum(not isinstance(x, ast.Starred) for x in node.args))
+            star = star or any(isinstance(x, ast.Starred) for x in node.args) or any(
+                k.arg is None for k in node.keywords
+            )
+            seen[name] = (kw, n_pos, star)
+    return seen
+
+
+def unset_parameters():
+    """Sorted ``(module, qualname, parameter)`` of every defaulted public
+    parameter in the package that no production call sets."""
+    modules = _load()
+    trees = [m.tree for m in modules.values()]  # the package and the root files
+    calls = _calls(trees)
+    out = []
+    for name, m in modules.items():
+        if name.split(".")[0] != PKG:
+            continue
+        for qual, call, param, pos in _defaulted_params(m.tree):
+            kw, n_pos, star = calls.get(call, (set(), 0, False))
+            if star or param in kw or (pos is not None and pos < n_pos):
+                continue
+            if (name, qual, param) not in ALLOWED_PARAMS:
+                out.append((name, qual, param))
+    return sorted(out)
+
+
+def test_every_defaulted_parameter_is_set_by_a_production_call():
+    missing = unset_parameters()
+    assert not missing, (
+        "defaulted parameters no production call sets (make them constants):\n"
+        + "\n".join(f"  {m}.{q}({p})" for m, q, p in missing)
+    )
+
+
+def test_no_tracked_source_hardcodes_the_checkout_path():
+    """A script that puts a literal path on ``sys.path``, or names this
+    checkout's absolute path, runs or writes another checkout's code from a
+    second clone or a CI workdir; derive the root from ``__file__``."""
+    import subprocess
+
+    files = subprocess.run(
+        ["git", "ls-files", "*.py"], cwd=ROOT, capture_output=True, text=True, check=True
+    ).stdout.split()
+    hits = []
+    for f in files:
+        if f.startswith("tests/data/"):
+            continue
+        for node in ast.walk(ast.parse((ROOT / f).read_text(), f)):
+            if isinstance(node, ast.Call) and _dotted(node.func) in (
+                ["sys", "path", "insert"], ["sys", "path", "append"]
+            ):
+                if any(isinstance(a, ast.Constant) and isinstance(a.value, str) for a in node.args):
+                    hits.append(f"{f}:{node.lineno} literal sys.path entry")
+            elif isinstance(node, ast.Constant) and isinstance(node.value, str):
+                if str(ROOT) in node.value:
+                    hits.append(f"{f}:{node.lineno} names {ROOT}")
+    assert not hits, "\n".join(hits)

@@ -168,10 +168,10 @@ def test_delete_pending_sink_dirs(spark, tmp_path):
 def test_recommit_overwrites(tmp_path, spark):
     man_p = str(tmp_path / "m")
     now = datetime.now(timezone.utc)
-    commit_partition(man_p, 7, 10, 1, now, attempt=1)
-    commit_partition(man_p, 7, 10, 1, now, attempt=2)  # retry same partition
+    commit_partition(man_p, 7, 10, 1, now)
+    commit_partition(man_p, 7, 12, 0, now)  # retry same partition
     rows = spark.read.parquet(man_p).where("part_id = 7").collect()
-    assert len(rows) == 1 and rows[0]["attempt"] == 2
+    assert len(rows) == 1 and (rows[0]["n_rows"], rows[0]["n_violations"]) == (12, 0)
 
 
 def test_ancestor_dir_named_part_id_is_not_a_partition(spark, tmp_path):
@@ -235,6 +235,25 @@ def test_done_partitions_remote_uri_reads_with_spark(spark, monkeypatch):
     monkeypatch.setattr(M, "read_manifest", fake_read)
     assert M.done_partitions(spark, "s3a://bucket/manifest") == {4}
     assert seen == ["s3a://bucket/manifest"]
+
+
+def test_remote_manifest_fails_before_any_work(spark, tmp_path, monkeypatch):
+    """Manifest commits write local files, so a remote manifest URI must
+    fail before the clips are read, not after every partition was validated
+    and every sink written."""
+    import pytest
+
+    from baskerville_spark.runtime import manifest as M
+
+    clips_p, _, _, out_p = _paths(tmp_path)
+    write_clips(spark, clips_p, CFG)
+    monkeypatch.setattr(M, "done_partitions", lambda spark_, path: set())
+    with pytest.raises(ValueError, match="manifest commits write local files"):
+        run_resumable(
+            spark, clips_p, "s3a://bucket/manifest", out_p,
+            cfg=ValidationConfig(check_audio=False),
+        )
+    assert not (tmp_path / "out").exists()
 
 
 def test_route_quarantine_partitions_input(spark):

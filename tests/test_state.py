@@ -1,4 +1,4 @@
-"""State cache (enrich/upsert/expire/StateStore) + streaming stateful."""
+"""State cache (enrich/upsert/StateStore) + streaming stateful."""
 
 from __future__ import annotations
 
@@ -9,7 +9,6 @@ from pyspark.sql import functions as F
 from baskerville_spark.runtime.state import (
     StateStore,
     enrich_with_state,
-    expire_state,
     upsert_state,
 )
 
@@ -51,16 +50,6 @@ def test_enrich_and_prune(spark):
     enriched = {r["k"]: r["old_n"] for r in
                 enrich_with_state(batch, state, ["k"], ["n"]).collect()}
     assert enriched == {"b": 20, "c": None}
-
-
-def test_expire(spark):
-    state = spark.createDataFrame(
-        [("a", 50000.0), ("b", 99800.0)], "k string, updated_at double"
-    )
-    kept = {r["k"] for r in expire_state(state, now_epoch_s=100000.0, ttl_s=86400).collect()}
-    assert kept == {"a", "b"}
-    kept = {r["k"] for r in expire_state(state, now_epoch_s=100000.0, ttl_s=500).collect()}
-    assert kept == {"b"}
 
 
 def test_state_store_atomic_flip(spark, tmp_path):
@@ -219,150 +208,11 @@ def test_kafka_shaped_stream_microbatches(spark, tmp_path):
     assert got == want
 
 
-def test_streaming_state_ttl_evicts_idle_key(spark, tmp_path):
-    """ProcessingTimeTimeout parity with the reference's cache_expire_time
-    (config.py:363-368): a key idle past ttl_ms emits a final evicted=true
-    row and its state is DROPPED, so its next appearance starts from empty
-    state — the batch path covers this via expire_state; this drives the
-    applyInPandasWithState path across real micro-batches.
-
-    NOTE: processAllAvailable() never latches under processing-time
-    timeouts (the engine keeps scheduling sweep batches), so the test polls
-    the memory sink with deadlines instead.
-    """
-    import json
-    import os
-
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    from baskerville_spark.streaming.stateful import incremental_group_stats
-
-    def wait_for(name, pred, deadline_s=90):
-        end = time.time() + deadline_s
-        while time.time() < end:
-            rows = spark.sql(f"SELECT * FROM {name}").collect()
-            if pred(rows):
-                return rows
-            time.sleep(0.5)
-        raise TimeoutError(f"sink condition not met; last rows: {rows}")
-
-    src = tmp_path / "ttl_src"
-    os.makedirs(src)
-    with open(src / "b1.json", "w") as f:
-        f.write(json.dumps({"key": "idle", "value": 1.0}) + "\n")
-
-    out = incremental_group_stats(
-        spark.readStream.schema("key string, value double")
-        .option("maxFilesPerTrigger", 1)
-        .json(str(src)),
-        timeout=GroupStateTimeout.ProcessingTimeTimeout,
-        ttl_ms=2_000,
-    )
-    name = f"ttl_{int(time.time() * 1000)}"
-    q = out.writeStream.outputMode("update").format("memory").queryName(name).start()
-    try:
-        wait_for(name, lambda rows: any(r["key"] == "idle" for r in rows))
-        # the timeout sweep fires in a later (possibly empty) micro-batch:
-        # wait for the explicit eviction row carrying the last-known stats
-        evicted = wait_for(
-            name, lambda rows: any(r["evicted"] for r in rows)
-        )
-        ev = [r for r in evicted if r["evicted"]][0]
-        assert ev["key"] == "idle" and ev["n_total"] == 1 and ev["min_value"] == 1.0
-        # the key reappears: with its state dropped it must restart fresh
-        with open(src / "b2.json", "w") as f:
-            f.write(json.dumps({"key": "idle", "value": 5.0}) + "\n")
-        rows = wait_for(
-            name,
-            lambda rows: any(
-                r["key"] == "idle" and not r["evicted"] and r["min_value"] == 5.0
-                for r in rows
-            ),
-        )
-    finally:
-        q.stop()
-
-    fresh = [r for r in rows if r["key"] == "idle" and not r["evicted"]][-1]
-    # without eviction this would merge: n_total=2, n_batches=2, min=1.0
-    assert fresh["n_total"] == 1 and fresh["n_batches"] == 1
-    assert fresh["min_value"] == 5.0 and fresh["mean_value"] == 5.0
-
-
-def test_streaming_state_event_time_ttl(spark, tmp_path):
-    """EventTimeTimeout TTL: eviction is driven by the WATERMARK passing
-    ttl_ms after a key's LATEST event time, so the test is fully
-    deterministic (no wall-clock sleeps, and processAllAvailable latches
-    because no processing-time timers fire). Timeline (ttl = 1 min,
-    watermark delay 0):
-
-    - b1: idle@10:00, live@10:00 → both armed to expire at 10:01
-    - b2: live@10:05 (watermark entering b2 is 10:00 < 10:01: idle
-      survives; live re-arms to 10:06)
-    - b3: feeder@10:07 (watermark 10:05 > idle's 10:01 → idle EVICTED;
-      live's 10:06 > 10:05 → survives)
-    - b4: idle@10:10 (watermark 10:07 > live's 10:06 → live EVICTED with
-      its full history; idle restarts from EMPTY state)
-    """
-    import json
-    import os
-
-    from pyspark.sql import functions as F
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    from baskerville_spark.streaming.stateful import incremental_group_stats
-
-    src = tmp_path / "ett_src"
-    os.makedirs(src)
-
-    def write(name, rows):
-        with open(src / name, "w") as f:
-            for r in rows:
-                f.write(json.dumps(r) + "\n")
-
-    write("b1.json", [
-        {"key": "idle", "value": 1.0, "ts": "2024-01-01 10:00:00"},
-        {"key": "live", "value": 10.0, "ts": "2024-01-01 10:00:00"},
-    ])
-    stream = (
-        spark.readStream.schema("key string, value double, ts string")
-        .option("maxFilesPerTrigger", 1)
-        .json(str(src))
-        .withColumn("ts", F.to_timestamp("ts"))
-        .withWatermark("ts", "0 seconds")
-    )
-    out = incremental_group_stats(
-        stream,
-        timeout=GroupStateTimeout.EventTimeTimeout,
-        ttl_ms=60_000,
-        ts_col="ts",
-    )
-    name = f"ett_{int(time.time() * 1000)}"
-    q = out.writeStream.outputMode("update").format("memory").queryName(name).start()
-    try:
-        q.processAllAvailable()
-        write("b2.json", [{"key": "live", "value": 20.0, "ts": "2024-01-01 10:05:00"}])
-        q.processAllAvailable()
-        write("b3.json", [{"key": "feeder", "value": 0.0, "ts": "2024-01-01 10:07:00"}])
-        q.processAllAvailable()
-        write("b4.json", [{"key": "idle", "value": 5.0, "ts": "2024-01-01 10:10:00"}])
-        q.processAllAvailable()
-    finally:
-        q.stop()
-
-    rows = spark.sql(f"SELECT * FROM {name}").collect()
-    evicted = {r["key"]: r for r in rows if r["evicted"]}
-    assert evicted["idle"]["n_total"] == 1 and evicted["idle"]["min_value"] == 1.0
-    assert evicted["live"]["n_total"] == 2 and evicted["live"]["max_value"] == 20.0
-    fresh = [r for r in rows if r["key"] == "idle" and not r["evicted"]][-1]
-    assert fresh["n_total"] == 1 and fresh["n_batches"] == 1
-    assert fresh["min_value"] == 5.0
-
-
 def test_sensitive_split_merge_roundtrip(spark, tmp_path):
     """CacheSensitiveData -> predict -> MergeWithSensitiveData parity
     (tasks.py:1291-1428): the prediction leg never sees ip/target, the
-    merge restores them exactly, TTL evicts stale stash rows, and the
-    merge report carries the reference's lost-rows warning as data."""
+    merge restores them exactly, and the merge report carries the
+    reference's lost-rows warning as data."""
     from pyspark.sql import functions as F
 
     from baskerville_spark.runtime.sensitive import (
@@ -381,35 +231,29 @@ def test_sensitive_split_merge_roundtrip(spark, tmp_path):
     )
     keys = ["id_client", "uuid_request_set"]
     store = StateStore(str(tmp_path / "stash"))
-    anonymized = cache_sensitive(
-        df, store, keys, ["ip", "target"], now_epoch_s=1000.0
-    )
+    anonymized = cache_sensitive(df, store, keys, ["ip", "target"])
     assert "ip" not in anonymized.columns
     assert "target" not in anonymized.columns
 
     preds = anonymized.withColumn(
         "prediction", (F.col("score") > 0.5).cast("int")
     )
-    merged, rep = merge_sensitive(
-        preds, store, spark, keys, ttl_s=3600, now_epoch_s=1100.0
-    )
+    merged, rep = merge_sensitive(preds, store, spark, keys)
     rows = {r["uuid_request_set"]: r for r in merged.collect()}
     assert rows["rs1"]["ip"] == "1.2.3.4" and rows["rs1"]["prediction"] == 1
     assert rows["rs2"]["target"] == "example.net"
     assert rep.before == 2 and rep.after == 2 and rep.lost == 0
 
-    # TTL eviction: stash written at t=1000, merged at t=10000 with 1h TTL
-    _, rep2 = merge_sensitive(
-        preds, store, spark, keys, ttl_s=3600, now_epoch_s=10000.0 + 3600.0
-    )
-    assert rep2.after == 0 and rep2.lost == 2  # the reference's warning case
+    # predictions for keys the stash never saw: the reference's warning case
+    strangers = preds.withColumn("uuid_request_set", F.lit("rs9"))
+    _, rep2 = merge_sensitive(strangers, store, spark, keys)
+    assert rep2.after == 0 and rep2.lost == 2
 
 
 def test_sensitive_stash_accumulates_across_batches(spark, tmp_path):
     """The reference's merge-loss scenario (tasks.py:1411-1420): batch B
     stashes AFTER batch A but BEFORE A's predictions return — A's rows
-    must still be in the stash (per-key accumulate, newest-write-wins),
-    and TTL prunes only genuinely stale keys."""
+    must still be in the stash (per-key accumulate, newest-write-wins)."""
     from pyspark.sql import functions as F
 
     from baskerville_spark.runtime.sensitive import (
@@ -429,31 +273,16 @@ def test_sensitive_stash_accumulates_across_batches(spark, tmp_path):
         [("rs3", "3.3.3.3", 0.7), ("rs2", "9.9.9.9", 0.4)],  # rs2 updated
         "uuid_request_set string, ip string, score double",
     )
-    anon_a = cache_sensitive(batch_a, store, keys, ["ip"], now_epoch_s=1000.0)
-    cache_sensitive(batch_b, store, keys, ["ip"], now_epoch_s=1060.0)
+    anon_a = cache_sensitive(batch_a, store, keys, ["ip"])
+    cache_sensitive(batch_b, store, keys, ["ip"])
 
     # A's predictions return after B stashed: rs1 must still resolve
     preds_a = anon_a.withColumn("prediction", F.lit(1))
-    merged, rep = merge_sensitive(
-        preds_a, store, spark, keys, ttl_s=3600, now_epoch_s=1100.0
-    )
+    merged, rep = merge_sensitive(preds_a, store, spark, keys)
     rows = {r["uuid_request_set"]: r for r in merged.collect()}
     assert rows["rs1"]["ip"] == "1.1.1.1"  # survived batch B's write
     assert rows["rs2"]["ip"] == "9.9.9.9"  # newest write wins
     assert rep.lost == 0
-
-    # TTL prunes old untouched keys at the next cache_sensitive call
-    batch_c = spark.createDataFrame(
-        [("rs4", "4.4.4.4", 0.5)],
-        "uuid_request_set string, ip string, score double",
-    )
-    cache_sensitive(
-        batch_c, store, keys, ["ip"], ttl_s=60, now_epoch_s=5000.0
-    )
-    stash_keys = {
-        r["uuid_request_set"] for r in store.read(spark).collect()
-    }
-    assert stash_keys == {"rs4"}  # rs1-3 older than 60 s at t=5000
 
 
 def test_stateful_update_counts_batches_not_chunks():
@@ -463,11 +292,9 @@ def test_stateful_update_counts_batches_not_chunks():
     invocation, not once per chunk."""
     import pandas as pd
 
-    from baskerville_spark.streaming.stateful import _make_update
+    from baskerville_spark.streaming.stateful import _update as fn
 
     class _FakeState:
-        hasTimedOut = False
-
         def __init__(self):
             self._v = None
 
@@ -482,10 +309,6 @@ def test_stateful_update_counts_batches_not_chunks():
         def update(self, v):
             self._v = tuple(v)
 
-        def remove(self):
-            self._v = None
-
-    fn = _make_update(0)
     state = _FakeState()
     # one micro-batch, delivered as THREE chunks
     chunks = [pd.DataFrame({"value": [1.0, 2.0]}),
@@ -545,16 +368,17 @@ def test_render_prometheus():
     from baskerville_spark.runtime.metrics import render_prometheus
 
     txt = render_prometheus(
-        {"n_violations": 5, "rate": 0.25, "empty": None, "bad": float("nan")},
-        labels={"run id": 'a"b\n', "part": 3},
+        {"n_violations": 5, "rate": 0.25, "empty": None, "bad": float("nan"), "p-99": 1}
     )
     lines = txt.strip().split("\n")
-    # skipped: None and NaN; rendered: sorted, prefixed, labeled, escaped
+    # skipped: None and NaN; rendered: sorted, prefixed, sanitized
     assert lines == [
         "# TYPE baskerville_n_violations gauge",
-        'baskerville_n_violations{part="3",run_id="a\\"b\\n"} 5',
+        "baskerville_n_violations 5",
+        "# TYPE baskerville_p_99 gauge",
+        "baskerville_p_99 1",
         "# TYPE baskerville_rate gauge",
-        'baskerville_rate{part="3",run_id="a\\"b\\n"} 0.25',
+        "baskerville_rate 0.25",
     ]
     assert render_prometheus({}) == ""
 
