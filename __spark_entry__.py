@@ -16,6 +16,7 @@ from __future__ import annotations
 
 import uuid
 from collections.abc import Callable
+from contextlib import contextmanager
 
 import numpy as np
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -58,6 +59,7 @@ def _docs_wide(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _scan_par(spark, _t(spark, sf_dir, "documents"))
 
 
+@contextmanager
 def _stream_shuffle(spark: SparkSession):
     """Context manager sizing ``spark.sql.shuffle.partitions`` — which fixes
     the streaming STATE-STORE partition count at query start (AQE never
@@ -69,19 +71,13 @@ def _stream_shuffle(spark: SparkSession):
     function of state size (guide §2.2), so the gate value is independent of
     cluster width; production streams size it through their own session
     conf. Restores the batch setting on exit."""
-    from contextlib import contextmanager
-
-    @contextmanager
-    def _cm():
-        target = min(8, spark.sparkContext.defaultParallelism)
-        old = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", str(target))
-        try:
-            yield
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", old)
-
-    return _cm()
+    target = min(8, spark.sparkContext.defaultParallelism)
+    old = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", str(target))
+    try:
+        yield
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", old)
 
 
 def _drain_to_memory(spark: SparkSession, stream: DataFrame, mode: str,
@@ -528,7 +524,7 @@ def q14_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = _t(spark, sf_dir, "embeddings")
     qvec = [float(x) for x in emb.where("vec_id = 0").select("embedding").first()[0]]
-    top = cosine_topk(emb, qvec, k=10)
+    top = cosine_topk(emb, qvec)
     return top.select(F.col("id").alias("vec_id"), F.round("cosine_sim", 4).alias("cosine_sim"))
 
 
@@ -697,7 +693,7 @@ def q19_minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     from baskerville_spark.functions.dedup import minhash_lsh_pairs
 
     d = _docs_wide(spark, sf_dir)
-    p = minhash_lsh_pairs(d, n=3, num_hashes=32, bands=8, verify_threshold=0.8)
+    p = minhash_lsh_pairs(d, n=3, verify_threshold=0.8)
     return p.select("id_a", "id_b", F.round("jaccard", 6).alias("jaccard"))
 
 
@@ -1214,9 +1210,7 @@ def q32_srp_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     from baskerville_spark.functions.similarity import hyperplane_lsh_pairs
 
     aug = _augmented_embeddings(spark, sf_dir)
-    p = hyperplane_lsh_pairs(
-        aug, dim=64, n_planes=12, n_tables=4, threshold=0.9, seed=42
-    )
+    p = hyperplane_lsh_pairs(aug, n_tables=4, threshold=0.9)
     return p.select("id_a", "id_b", F.round("cosine_sim", 4).alias("cosine_sim"))
 
 
@@ -1340,7 +1334,7 @@ def q35_simhash_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     from baskerville_spark.functions.dedup import simhash_near_dups
 
     d = _docs_wide(spark, sf_dir)
-    return simhash_near_dups(d, max_hamming=3, hasher="md5")
+    return simhash_near_dups(d, hasher="md5")
 
 
 def _q35_sql() -> str:
@@ -1455,7 +1449,7 @@ def q38_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # driver-side sample is hard-capped at 256·n_centroids vectors
     cent = train_ivf_centroids(emb, n_centroids=8, sample_mod=3)
     qvec = [float(x) for x in emb.where("vec_id = 0").select("embedding").first()[0]]
-    top = ivf_topk(emb, qvec, cent, k=10, nprobe=2)
+    top = ivf_topk(emb, qvec, cent, nprobe=2)
     return top.select(F.col("id").alias("vec_id"), F.round("cosine_sim", 4).alias("cosine_sim"))
 
 
@@ -1644,21 +1638,17 @@ DRIFT_VALUE_EDGES = [0.0, 5.0, 25.0, 100.0, 500.0]
 DRIFT_VALUE_BASE = [0.3, 0.3, 0.2, 0.2]
 DRIFT_TYPE_CATS = ["click", "view", "purchase", "signup", "error"]
 DRIFT_TYPE_BASE = [0.2, 0.2, 0.2, 0.2, 0.2, 0.0]  # + trailing OTHER
+#: (column, bucket-count prefix, non-NULL count, baseline fractions)
+_DRIFT_COLS = (
+    ("value", "v", "n_v", DRIFT_VALUE_BASE),
+    ("event_type", "t", "n_t", DRIFT_TYPE_BASE),
+)
 
 
-def q44_drift_verdicts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PSI + binned-KS drift verdicts against a LITERAL baseline snapshot
-    (checks/drift.py math, previously pytest-only — this gate oracle-checks
-    the numerics). Partitions are week-of-month slices of the events table;
-    the baseline is a declared reference distribution (fixed bin edges +
-    fractions), the production shape where the snapshot comes from a
-    baseline table rather than percentile sketches (whose internals are
-    engine-private and belong to capture_baseline's own tests).
-    ONE scan + ONE shuffle: all buckets of both columns are conditional
-    sums in a single groupBy(part).agg(...)."""
+def _drift_fixture(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, list]:
+    """(events with a week-of-month ``part_id``, the literal baseline
+    snapshot) that q44 and q127 measure."""
     from pyspark.sql import Row
-
-    from baskerville_spark.checks.drift import drift_verdicts
 
     e = _t(spark, sf_dir, "events").withColumn(
         "part_id",
@@ -1671,7 +1661,59 @@ def q44_drift_verdicts(spark: SparkSession, sf_dir: str) -> DataFrame:
             categories=DRIFT_TYPE_CATS, bin_fractions=DRIFT_TYPE_BASE,
             quantiles=None, n=1000),
     ]
-    v = drift_verdicts(e, baseline)
+    return e, baseline
+
+
+def _drift_agg_sql() -> str:
+    """The ``base`` and ``agg`` CTEs of the q44/q127 oracles: per
+    part_id, the non-NULL counts ``n_v``/``n_t`` and the bucket counts
+    ``v0..`` of the value bins and ``t0..`` of the event types (OTHER
+    last)."""
+    inner = DRIFT_VALUE_EDGES[1:-1]
+    vbucket = " + ".join(f"(CASE WHEN value >= {repr(e)} THEN 1 ELSE 0 END)" for e in inner)
+    v_sums = ",\n    ".join(
+        f"SUM(CASE WHEN value IS NOT NULL AND ({vbucket}) = {i} THEN 1 ELSE 0 END) AS v{i}"
+        for i in range(len(inner) + 1)
+    )
+    cats = DRIFT_TYPE_CATS
+    t_sums = ",\n    ".join(
+        f"SUM(CASE WHEN event_type = '{c}' THEN 1 ELSE 0 END) AS t{i}"
+        for i, c in enumerate(cats)
+    )
+    in_list = ", ".join(f"'{c}'" for c in cats)
+    t_sums += (
+        f",\n    SUM(CASE WHEN event_type IS NOT NULL AND event_type NOT IN ({in_list})"
+        f" THEN 1 ELSE 0 END) AS t{len(cats)}"
+    )
+    return f"""
+WITH base AS (
+  SELECT CAST((day(ts) - 1) // 7 AS INT) AS part_id, value, event_type FROM events),
+agg AS (
+  SELECT part_id,
+    COUNT(value) AS n_v,
+    {v_sums},
+    COUNT(event_type) AS n_t,
+    {t_sums}
+  FROM base GROUP BY part_id)"""
+
+
+def _drift_frac(pfx: str, i: int, n: str) -> str:
+    return f"{pfx}{i} * 1.0 / GREATEST({n}, 1)"
+
+
+def q44_drift_verdicts(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """PSI + binned-KS drift verdicts against a LITERAL baseline snapshot
+    (checks/drift.py math, previously pytest-only — this gate oracle-checks
+    the numerics). Partitions are week-of-month slices of the events table;
+    the baseline is a declared reference distribution (fixed bin edges +
+    fractions), the production shape where the snapshot comes from a
+    baseline table rather than percentile sketches (whose internals are
+    engine-private and belong to capture_baseline's own tests).
+    ONE scan + ONE shuffle: all buckets of both columns are conditional
+    sums in a single groupBy(part).agg(...)."""
+    from baskerville_spark.checks.drift import drift_verdicts
+
+    v = drift_verdicts(*_drift_fixture(spark, sf_dir))
     return v.select(
         "part_id",
         "check_name",
@@ -1688,37 +1730,10 @@ def _q44_sql() -> str:
     checks/drift.py's fold-left evaluation order exactly."""
     from baskerville_spark.checks.drift import EPS, KS_THRESHOLD, PSI_THRESHOLD
 
-    def num(expr: str) -> str:
-        return expr
-
-    # --- numeric column: value ---
-    inner = DRIFT_VALUE_EDGES[1:-1]
-    nv = len(inner) + 1
-    vbucket = " + ".join(f"(CASE WHEN value >= {repr(e)} THEN 1 ELSE 0 END)" for e in inner)
-    v_sums = ",\n    ".join(
-        f"SUM(CASE WHEN value IS NOT NULL AND ({vbucket}) = {i} THEN 1 ELSE 0 END) AS v{i}"
-        for i in range(nv)
-    )
-    # --- categorical column: event_type ---
-    cats = DRIFT_TYPE_CATS
-    nt = len(cats) + 1
-    t_sums = ",\n    ".join(
-        f"SUM(CASE WHEN event_type = '{c}' THEN 1 ELSE 0 END) AS t{i}"
-        for i, c in enumerate(cats)
-    )
-    in_list = ", ".join(f"'{c}'" for c in cats)
-    t_sums += (
-        f",\n    SUM(CASE WHEN event_type IS NOT NULL AND event_type NOT IN ({in_list})"
-        f" THEN 1 ELSE 0 END) AS t{len(cats)}"
-    )
-
-    def frac(pfx: str, i: int, n: str) -> str:
-        return f"{pfx}{i} * 1.0 / GREATEST({n}, 1)"
-
     def psi_expr(pfx: str, n: str, base: list[float], nb: int) -> str:
         terms = []
         for i in range(nb):
-            p = f"GREATEST({frac(pfx, i, n)}, {repr(EPS)})"
+            p = f"GREATEST({_drift_frac(pfx, i, n)}, {repr(EPS)})"
             q = repr(max(base[i], EPS))
             terms.append(f"(({p}) - {q}) * LN(({p}) / {q})")
         return " + ".join(terms)
@@ -1726,21 +1741,18 @@ def _q44_sql() -> str:
     def ks_expr(pfx: str, n: str, base: list[float], nb: int) -> str:
         diffs = []
         for i in range(1, nb + 1):
-            pcdf = " + ".join(frac(pfx, j, n) for j in range(i))
+            pcdf = " + ".join(_drift_frac(pfx, j, n) for j in range(i))
             qcdf = repr(sum(base[:i]))  # same Python fold as drift_verdicts
             diffs.append(f"ABS(({pcdf}) - {qcdf})")
         return "GREATEST(" + ", ".join(diffs) + ")" if len(diffs) > 1 else diffs[0]
 
     blocks = []
-    for col, pfx, n, base, nb in (
-        ("value", "v", "n_v", DRIFT_VALUE_BASE, nv),
-        ("event_type", "t", "n_t", DRIFT_TYPE_BASE, nt),
-    ):
+    for col, pfx, n, base in _DRIFT_COLS:
         for metric, expr_fn, thr in (
             ("psi", psi_expr, PSI_THRESHOLD),
             ("ks", ks_expr, KS_THRESHOLD),
         ):
-            m = expr_fn(pfx, n, base, nb)
+            m = expr_fn(pfx, n, base, len(base))
             blocks.append(f"""
 SELECT part_id, '{metric}:{col}' AS check_name,
        CAST(({m}) <= {repr(thr)} AS INT) AS passed,
@@ -1749,18 +1761,7 @@ SELECT part_id, '{metric}:{col}' AS check_name,
        CAST({n} AS BIGINT) AS n_rows
 FROM agg""")
     union = "\nUNION ALL\n".join(blocks)
-    return f"""
-WITH base AS (
-  SELECT CAST((day(ts) - 1) // 7 AS INT) AS part_id, value, event_type FROM events),
-agg AS (
-  SELECT part_id,
-    COUNT(value) AS n_v,
-    {v_sums},
-    COUNT(event_type) AS n_t,
-    {t_sums}
-  FROM base GROUP BY part_id)
-{union}
-"""
+    return f"{_drift_agg_sql()}\n{union}\n"
 
 
 def q45_streaming_kafka_shaped(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1791,7 +1792,7 @@ def q45_streaming_kafka_shaped(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         name = f"q45_out_{uuid.uuid4().hex[:8]}"
         with _stream_shuffle(spark):
-            stream = read_kafka_shaped_stream(spark, tmp, max_files_per_trigger=2)
+            stream = read_kafka_shaped_stream(spark, tmp)
             decoded = decode_json_values(
                 stream, "event_id bigint, user_id bigint, event_type string, value double"
             )
@@ -2041,7 +2042,7 @@ def q48_ref_integrity(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     dim = _t(spark, sf_dir, "customer").select(F.col("c_custkey").alias("fk"))
     return ref_integrity_violations(
-        fact, dim, key="fk", part_col="part_id", strategy="broadcast"
+        fact, dim, key="fk", strategy="broadcast"
     ).withColumnRenamed("clip_id", "fk")
 
 
@@ -2138,7 +2139,7 @@ def q50_pattern_violations(spark: SparkSession, sf_dir: str) -> DataFrame:
         ColumnSpec("source", pattern="^src[0-9]+$"),
         ColumnSpec("lang", pattern="^[a-z]{2}$"),
     ]
-    return pattern_violations(d, specs, key="doc_id", part_col="part_id")
+    return pattern_violations(d, specs, key="doc_id")
 
 
 _Q50_SQL = """
@@ -3027,9 +3028,7 @@ def q63_sensitive_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     out = []
     for anon in (anon1, anon2):
-        merged, rep = merge_sensitive(
-            predict(anon), store, spark, ["event_id"], report=True
-        )
+        merged, rep = merge_sensitive(predict(anon), store, spark, ["event_id"])
         if rep.lost != 0:  # reference logs this; we fail loudly
             raise RuntimeError(f"merge lost {rep.lost} prediction rows")
         out.append(merged.select("event_id", "prediction", *sensitive_cols))
@@ -3084,7 +3083,7 @@ def q64_stateful_stream_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("maxFilesPerTrigger", 1)
         .parquet(src)
     )
-    out = incremental_group_stats(stream, key_col="user_id", value_col="value")
+    out = incremental_group_stats(stream, key_col="user_id")
     rows = _drain_to_memory(spark, out, "update", "q64")
     import shutil
 
@@ -3220,7 +3219,7 @@ def q65_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     membership = membership.persist()
     membership.count()
     out = dedup_clusters(
-        membership, id_col="doc_id", bucket_col="bucket", vertices=corpus
+        membership, id_col="doc_id", vertices=corpus
     ).select(
         F.col("id").alias("doc_id"), "cluster_id", "cluster_size", "is_canonical"
     )
@@ -3333,7 +3332,6 @@ def q67_chain_clusters_bigstar(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dedup_clusters(
         membership,
         id_col="doc_id",
-        bucket_col="bucket",
         vertices=d,
         algorithm="bigstar",
     ).select(
@@ -3396,7 +3394,6 @@ def q68_incremental_chain_clusters(spark: SparkSession, sf_dir: str) -> DataFram
     prior = dedup_clusters(
         b1,
         id_col="doc_id",
-        bucket_col="bucket",
         vertices=d.where(F.col("doc_id") % 2 == 0),
         algorithm="bigstar",
     ).select("id", "cluster_id")
@@ -3405,12 +3402,10 @@ def q68_incremental_chain_clusters(spark: SparkSession, sf_dir: str) -> DataFram
         prior.withColumnRenamed("id", "doc_id"),
         retained_index=b1,
         id_col="doc_id",
-        bucket_col="bucket",
     )
     return dedup_clusters(
         inc_m,
         id_col="doc_id",
-        bucket_col="bucket",
         vertices=d,
         algorithm="bigstar",
     ).select(
@@ -3528,7 +3523,7 @@ def q70_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("text"),
         )
     )
-    p = shingle_containment_pairs(corpus, n=3, threshold=0.8, max_df=50)
+    p = shingle_containment_pairs(corpus, max_df=50)
     return p.select(
         "id_a",
         "id_b",
@@ -3903,7 +3898,7 @@ def q76_decontamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = _scan_par(spark, _t(spark, sf_dir, "documents").select("doc_id", "text"))
     bench = d.where(F.col("doc_id") % 10 == 7)
     train = d.where(F.col("doc_id") % 10 != 7)
-    return decontaminate(train, bench, n=8)
+    return decontaminate(train, bench)
 
 
 _Q76_SQL = """
@@ -3930,7 +3925,7 @@ def q77_sequence_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
     from baskerville_spark.functions.packing import pack_sequences, packed_bin_summary
 
     d = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    return packed_bin_summary(pack_sequences(d, bin_tokens=512))
+    return packed_bin_summary(pack_sequences(d))
 
 
 _Q77_SQL = """
@@ -3970,7 +3965,7 @@ def q78_mixture_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     from baskerville_spark.functions.sampling import mixture_sample
 
     d = _t(spark, sf_dir, "documents").select("doc_id", "source")
-    return mixture_sample(d, _MIX_WEIGHTS, group_col="source", id_col="doc_id")
+    return mixture_sample(d, _MIX_WEIGHTS)
 
 
 def _q78_sql() -> str:
@@ -4005,7 +4000,7 @@ def q79_chunk_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     from baskerville_spark.functions.packing import chunk_documents
 
     d = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    return chunk_documents(d, chunk_tokens=100, stride=80)
+    return chunk_documents(d)
 
 
 _Q79_SQL = """
@@ -4073,7 +4068,7 @@ def q81_robust_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     e = _t(spark, sf_dir, "events").select("event_id", "event_type", "value")
     return robust_outlier_violations(
-        e, "value", part_col="event_type", id_cols=["event_id"], k=5.0
+        e, "value", part_col="event_type", id_cols=["event_id"]
     )
 
 
@@ -4128,9 +4123,7 @@ def q82_audio_content_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         "clip_id", F.concat(F.lit("xcopy_"), F.col("clip_id"))
     )
     corpus = clips.unionByName(copies)
-    pairs = content_duplicate_pairs(
-        audio_content_fingerprints(corpus), exact=True
-    )
+    pairs = content_duplicate_pairs(audio_content_fingerprints(corpus))
     out = pairs.persist()
     out.count()
     return out
@@ -4381,7 +4374,7 @@ def q87_downmix(spark: SparkSession, sf_dir: str) -> DataFrame:
         return [planted_clip("st", i, stereo, bin_k=k)]
 
     clips = rows_from_range(spark, 150, plant, PLANT_SCHEMA + ", bin_k int")
-    mono = audio_downmix(clips, n_channels=2)
+    mono = audio_downmix(clips)
     feats = audio_spectral_features(mono, n_fft=n_fft).join(
         clips.select("clip_id", "bin_k"), "clip_id"
     )
@@ -4433,7 +4426,7 @@ def q88_trim_silence(spark: SparkSession, sf_dir: str) -> DataFrame:
     the real decode → trim → encode → decode pipeline."""
     from baskerville_spark.functions.audio_quality import audio_trim_silence
 
-    trimmed = audio_trim_silence(_q88_q89_clips(spark), threshold=100)
+    trimmed = audio_trim_silence(_q88_q89_clips(spark))
     return au.decode_pass(
         trimmed.select("clip_id", "bytes", "codec"),
         T.StructType.fromDDL("clip_id string, trimmed_samples long"),
@@ -4508,7 +4501,7 @@ def q90_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
         return [planted_clip("nm", i, np.full(n, amp, dtype="<i2"), codec)]
 
     clips = rows_from_range(spark, 150, plant, PLANT_SCHEMA)
-    return _len_peak(audio_normalize(clips, target_peak=20000))
+    return _len_peak(audio_normalize(clips))
 
 
 _Q90_SQL = """
@@ -4571,7 +4564,7 @@ def q92_pitch(spark: SparkSession, sf_dir: str) -> DataFrame:
         return [planted_clip("pt", i, pcm, planted_p=p)]
 
     clips = rows_from_range(spark, 150, plant, PLANT_SCHEMA + ", planted_p int")
-    periods = audio_pitch_period(clips, min_lag=2, max_lag=64, window=512)
+    periods = audio_pitch_period(clips)
     return periods.join(clips.select("clip_id", "planted_p"), "clip_id").select(
         "clip_id",
         "period_samples",
@@ -4604,7 +4597,7 @@ def q93_bloom_semi(spark: SparkSession, sf_dir: str) -> DataFrame:
     dim = _t(spark, sf_dir, "customer").where(F.col("c_custkey") % 7 == 0)
     out = bloom_semi_join(
         orders, dim, fact_key="o_custkey", dim_key="c_custkey",
-        m_bits=1 << 16, n_hashes=5,
+        m_bits=1 << 16,
     )
     return out.select("o_orderkey", "o_custkey")
 
@@ -5063,7 +5056,7 @@ def q100_corpus_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     from baskerville_spark.functions.sampling import train_val_test_split
 
     d = _t(spark, sf_dir, "documents")
-    return d.select("doc_id", train_val_test_split("doc_id"))
+    return d.select("doc_id", train_val_test_split())
 
 
 _Q100_SQL = """
@@ -5303,7 +5296,7 @@ def q105_split_on_silence(spark: SparkSession, sf_dir: str) -> DataFrame:
         return [planted_clip("vd", i, pcm)]
 
     clips = rows_from_range(spark, 150, plant, PLANT_SCHEMA)
-    segs = audio_split_on_silence(clips, threshold=100, min_gap=64)
+    segs = audio_split_on_silence(clips)
     return segs.groupBy("clip_id").agg(
         F.count(F.lit(1)).cast("long").alias("n_segments"),
         F.min("n_samples").cast("long").alias("min_len"),
@@ -5525,7 +5518,7 @@ def q109_audio_align(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.format_string("al_%06d", "id").alias("base_id"),
         F.format_string("tw_%06d", "id").alias("twin_id"),
     )
-    return audio_align_offsets(clips, cands, frame=64)
+    return audio_align_offsets(clips, cands)
 
 
 _Q109_SQL = """
@@ -5640,7 +5633,7 @@ def q111_bandwidth(spark: SparkSession, sf_dir: str) -> DataFrame:
         return [planted_clip("bw", i, np.rint(x).astype("<i2"))]
 
     clips = rows_from_range(spark, 150, plant, PLANT_SCHEMA)
-    return audio_bandwidth(clips, n_fft=256, energy_frac=0.99).select(
+    return audio_bandwidth(clips).select(
         "clip_id", "rolloff_bin", "band_frac"
     )
 
@@ -5804,7 +5797,7 @@ def q114_bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
             " ",
         ).alias("text"),
     )
-    return train_bpe_merges(docs, n_merges=12, min_freq=2)
+    return train_bpe_merges(docs, n_merges=12)
 
 
 _Q114_SQL = """
@@ -5847,7 +5840,7 @@ def q115_bpe_tokenize(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).unionByName(
         spark.createDataFrame([(12, "zq zq")], "doc_id long, text string")
     )
-    merges = train_bpe_merges(docs, n_merges=12, min_freq=2)
+    merges = train_bpe_merges(docs, n_merges=12)
     toks = apply_bpe(docs, merges)
     return toks.select(
         "doc_id",
@@ -5891,7 +5884,7 @@ def q116_dedup_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.format_string("unique line %d beta", "id"),
         ).alias("text"),
     )
-    return dedup_lines(docs, min_line_chars=1)
+    return dedup_lines(docs)
 
 
 _Q116_SQL = """
@@ -5942,7 +5935,7 @@ def q117_vad_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         return [planted_clip("vd", i, pcm)]
 
     clips = rows_from_range(spark, 150, plant, PLANT_SCHEMA)
-    return audio_vad_stats(clips, threshold=100, min_gap=64).select(
+    return audio_vad_stats(clips).select(
         "clip_id", "n_samples", "n_utterances", "speech_samples",
         "speech_frac", "longest_gap",
     )
@@ -6005,7 +5998,7 @@ def q118_constraint_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     cons = [
         S.completeness("text_complete", "text", max_null_rate=0.10),
         S.bounds("chars_bounds", "n_chars", 100, 600, max_rate=0.25),
-        S.pattern("lang_2letter", "lang", "^[a-z]{2}$", max_rate=0.0),
+        S.pattern("lang_2letter", "lang", "^[a-z]{2}$"),
         S.membership("lang_known", "lang",
                      ["en", "zh", "es", "de", "fr"], max_rate=0.30),
         S.predicate("long_docs", "n_chars >= 100", max_rate=0.9),
@@ -6762,22 +6755,9 @@ FROM scoped WHERE part = 2 AND event_id % 13 = 1
 
 
 def q127_psi_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Row
-
     from baskerville_spark.checks.drift import psi_attribution
 
-    e = _t(spark, sf_dir, "events").withColumn(
-        "part_id",
-        ((F.dayofmonth(F.col("ts").cast("timestamp")) - 1) / 7).cast("int"),
-    )
-    baseline = [
-        Row(column_name="value", kind="numeric", bin_edges=DRIFT_VALUE_EDGES,
-            categories=None, bin_fractions=DRIFT_VALUE_BASE, quantiles=None, n=1000),
-        Row(column_name="event_type", kind="categorical", bin_edges=None,
-            categories=DRIFT_TYPE_CATS, bin_fractions=DRIFT_TYPE_BASE,
-            quantiles=None, n=1000),
-    ]
-    a = psi_attribution(e, baseline)
+    a = psi_attribution(*_drift_fixture(spark, sf_dir))
     return a.select(
         "part_id",
         "check_name",
@@ -6794,40 +6774,14 @@ def _q127_sql() -> str:
     clamp, identical left-assoc term sum, identical EPS total guard."""
     from baskerville_spark.checks.drift import EPS
 
-    inner = DRIFT_VALUE_EDGES[1:-1]
-    nv = len(inner) + 1
-    vbucket = " + ".join(
-        f"(CASE WHEN value >= {repr(e)} THEN 1 ELSE 0 END)" for e in inner
-    )
-    v_sums = ",\n    ".join(
-        f"SUM(CASE WHEN value IS NOT NULL AND ({vbucket}) = {i} THEN 1 ELSE 0 END) AS v{i}"
-        for i in range(nv)
-    )
-    cats = DRIFT_TYPE_CATS
-    nt = len(cats) + 1
-    t_sums = ",\n    ".join(
-        f"SUM(CASE WHEN event_type = '{c}' THEN 1 ELSE 0 END) AS t{i}"
-        for i, c in enumerate(cats)
-    )
-    in_list = ", ".join(f"'{c}'" for c in cats)
-    t_sums += (
-        f",\n    SUM(CASE WHEN event_type IS NOT NULL AND event_type NOT IN ({in_list})"
-        f" THEN 1 ELSE 0 END) AS t{len(cats)}"
-    )
-
-    def frac(pfx: str, i: int, n: str) -> str:
-        return f"{pfx}{i} * 1.0 / GREATEST({n}, 1)"
-
     def term(pfx: str, i: int, n: str, base: list[float]) -> str:
-        p = f"GREATEST({frac(pfx, i, n)}, {repr(EPS)})"
+        p = f"GREATEST({_drift_frac(pfx, i, n)}, {repr(EPS)})"
         q = repr(max(base[i], EPS))
         return f"((({p}) - {q}) * LN(({p}) / {q}))"
 
     blocks = []
-    for col, pfx, n, base, nb in (
-        ("value", "v", "n_v", DRIFT_VALUE_BASE, nv),
-        ("event_type", "t", "n_t", DRIFT_TYPE_BASE, nt),
-    ):
+    for col, pfx, n, base in _DRIFT_COLS:
+        nb = len(base)
         total = "GREATEST(" + " + ".join(
             term(pfx, i, n, base) for i in range(nb)
         ) + f", {repr(EPS)})"
@@ -6835,24 +6789,13 @@ def _q127_sql() -> str:
             t = term(pfx, i, n, base)
             blocks.append(f"""
 SELECT part_id, 'psi:{col}' AS check_name, CAST({i} AS INT) AS bin_idx,
-       ROUND({frac(pfx, i, n)}, 6) AS cur_frac,
+       ROUND({_drift_frac(pfx, i, n)}, 6) AS cur_frac,
        CAST({repr(float(base[i]))} AS DOUBLE) AS base_frac,
        ROUND({t}, 6) AS contribution,
        ROUND(({t}) / ({total}), 6) AS share
 FROM agg""")
     union = "\nUNION ALL\n".join(blocks)
-    return f"""
-WITH base AS (
-  SELECT CAST((day(ts) - 1) // 7 AS INT) AS part_id, value, event_type FROM events),
-agg AS (
-  SELECT part_id,
-    COUNT(value) AS n_v,
-    {v_sums},
-    COUNT(event_type) AS n_t,
-    {t_sums}
-  FROM base GROUP BY part_id)
-{union}
-"""
+    return f"{_drift_agg_sql()}\n{union}\n"
 
 
 # --------------------------------------------------------------------------
@@ -6902,9 +6845,7 @@ def q128_metric_anomalies(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("mean_chars") * ramp_mean).alias("metric_value"),
         )
     )
-    rep = detect_metric_anomalies(
-        hist, k_sigma=3.0, rel_change_max=0.5, min_history=3
-    )
+    rep = detect_metric_anomalies(hist)
     return rep.select(
         "run_id",
         "part_id",
@@ -6985,8 +6926,7 @@ def q129_suggest_constraints(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.concat(F.lit("c"), (F.col("o_orderkey") % 30).cast("string"))
         ).alias("o_tag"),
     )
-    return suggest_constraints(src, max_members=20, low_null_max=0.05,
-                               pad=1.25)
+    return suggest_constraints(src)
 
 
 _Q129_COLS = [
@@ -7136,7 +7076,7 @@ def q131_dc_offset(spark: SparkSession, sf_dir: str) -> DataFrame:
         return [planted_clip("bias", i, x)]
 
     clips = rows_from_range(spark, 300, plant, PLANT_SCHEMA)
-    return audio_dc_offset(clips, suspect_frac=0.02).select(
+    return audio_dc_offset(clips).select(
         "clip_id", "n_samples", "dc_mean", "dc_frac", "dc_suspect"
     )
 
@@ -7351,7 +7291,7 @@ def q135_zipf_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     from baskerville_spark.functions.text import zipf_fit
 
     docs = _t(spark, sf_dir, "documents")
-    out = zipf_fit(docs, "text", top_k=500)
+    out = zipf_fit(docs, "text")
     return out.select(
         "n_ranked",
         F.round("slope", 6).alias("slope"),
@@ -7861,7 +7801,7 @@ def q144_out_of_order(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("ts") - F.expr("INTERVAL 2 DAYS"),
         ).otherwise(F.col("ts")).alias("ts"),
     )
-    return out_of_order_stats(ev, "user_id", "event_id", "ts", threshold=0.01)
+    return out_of_order_stats(ev, "user_id", "event_id", "ts")
 
 
 _Q144_SQL = """

@@ -152,7 +152,6 @@ def out_of_order_stats(
     key_col: str,
     seq_col: str,
     ts_col: str,
-    threshold: float = 0.01,
 ) -> DataFrame:
     """Ingestion-order QA: per key, the fraction of events whose event
     time runs BEHIND the running maximum of everything already ingested
@@ -173,7 +172,7 @@ def out_of_order_stats(
     place in the ingest order (the ascending window sorts it first), so
     it never counts as late and its ts never enters the running max; it
     still counts in n_events. Returns (key, n_events, n_late, late_frac,
-    flagged).
+    flagged); a key is flagged when more than 1% of its events are late.
     """
     from pyspark.sql import Window
 
@@ -201,6 +200,6 @@ def out_of_order_stats(
             "n_events",
             "n_late",
             frac.alias("late_frac"),
-            (frac > F.lit(threshold)).alias("flagged"),
+            (frac > F.lit(0.01)).alias("flagged"),
         )
     )

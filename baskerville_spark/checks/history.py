@@ -36,12 +36,7 @@ from pyspark.sql import functions as F
 STDDEV_FLOOR = 1e-9
 
 
-def detect_metric_anomalies(
-    history: DataFrame,
-    k_sigma: float = 3.0,
-    rel_change_max: float = 0.5,
-    min_history: int = 3,
-) -> DataFrame:
+def detect_metric_anomalies(history: DataFrame) -> DataFrame:
     """Flag metric values that break from their own trailing history.
 
     For every (part_id, column_name, metric_name) series ordered by run_id,
@@ -49,15 +44,15 @@ def detect_metric_anomalies(
     (``rowsBetween`` ending at -1 — the current value never contaminates its
     own baseline):
 
-    - **k-sigma band** (the reference's incident rule):
-      ``|value - trailing_mean| > k_sigma * max(trailing_stddev, floor)``
+    - **3-sigma band** (the reference's incident rule):
+      ``|value - trailing_mean| > 3 * max(trailing_stddev, floor)``
     - **relative-change bound** (catches the flat-history case where stddev
       is ~0 and any jump is infinite sigmas — and gives a meaningful rule
-      for the first runs after ``min_history``):
-      ``|value - trailing_mean| > rel_change_max * max(|trailing_mean|, floor)``
+      for the first runs after the warm-up):
+      ``|value - trailing_mean| > 0.5 * max(|trailing_mean|, floor)``
 
-    A row is an anomaly when EITHER rule fires and at least ``min_history``
-    prior runs exist (fewer ⇒ ``anomaly`` is false and trailing columns are
+    A row is an anomaly when EITHER rule fires and at least 3 prior runs
+    exist (fewer ⇒ ``anomaly`` is false and trailing columns are
     still reported, so callers can audit warm-up runs).  Returns the history
     columns plus ``trailing_n, trailing_mean, trailing_stddev, z_score,
     rel_change, anomaly``.
@@ -88,8 +83,8 @@ def detect_metric_anomalies(
         z.alias("z_score"),
         rel.alias("rel_change"),
         (
-            (n >= int(min_history))
-            & ((F.abs(v - mean) > float(k_sigma) * std_eff)
-               | (F.abs(v - mean) > float(rel_change_max) * mean_eff))
+            (n >= 3)
+            & ((F.abs(v - mean) > 3.0 * std_eff)
+               | (F.abs(v - mean) > 0.5 * mean_eff))
         ).alias("anomaly"),
     )

@@ -26,11 +26,10 @@ def ref_integrity_violations(
     clips: DataFrame,
     transcript_ref: DataFrame,
     key: str = "clip_id",
-    part_col: str = "part_id",
     strategy: str = "auto",  # 'auto' | 'broadcast' | 'sortmerge'
 ) -> DataFrame:
     """Clip keys with no row in the reference dim → violation rows."""
-    fact = clips.select(part_col, key)  # payload never shuffles
+    fact = clips.select("part_id", key)  # payload never shuffles
     dim = transcript_ref.select(key).distinct()
     if strategy == "broadcast":
         dim = F.broadcast(dim)
@@ -38,7 +37,7 @@ def ref_integrity_violations(
         dim = dim.hint("merge")
     missing = fact.join(dim, on=key, how="left_anti")
     return missing.select(
-        F.col(part_col).cast("int").alias("part_id"),
+        F.col("part_id").cast("int").alias("part_id"),
         F.col(key).alias("clip_id"),
         F.lit("ref_integrity").alias("check_name"),
         F.lit("clip_id missing from transcript_ref").alias("detail"),

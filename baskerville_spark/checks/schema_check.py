@@ -70,7 +70,6 @@ def pattern_violations(
     df: DataFrame,
     specs: list[ColumnSpec],
     key: str = "clip_id",
-    part_col: str = "part_id",
 ) -> DataFrame | None:
     """Violation rows for declared-pattern mismatches (the check the
     reference declared but never ran).
@@ -95,7 +94,7 @@ def pattern_violations(
         return None
     # SQL text: one py4j call where Column algebra took dozens (checks/sqltext)
     return df.selectExpr(
-        f"CAST({sqltext.ident(part_col)} AS INT) AS part_id",
+        "CAST(part_id AS INT) AS part_id",
         f"{sqltext.ident(key)} AS clip_id",
         f"explode(array_compact(array({', '.join(pieces)}))) AS __v",
     ).select("part_id", "clip_id", "__v.*")

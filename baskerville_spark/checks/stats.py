@@ -47,6 +47,8 @@ from baskerville_spark.checks.stats_state import sketchable_sql
 DEFAULT_QUANTILES = [0.01, 0.05, 0.25, 0.5, 0.75, 0.95, 0.99]
 #: HLL sketch size of ``approx_distinct`` (relative error under 0.02)
 HLL_LG_K = 12
+#: robust z-score above which ``robust_outlier_violations`` flags a value
+OUTLIER_K = 5.0
 
 
 def _stat(col: str, stat: str) -> str:
@@ -178,10 +180,9 @@ def robust_outlier_violations(
     value_col: str,
     part_col: str = "part_id",
     id_cols: list[str] | None = None,
-    k: float = 5.0,
 ) -> DataFrame:
     """Median/MAD robust outlier flagging per partition:
-    ``|x − median| > k · 1.4826 · MAD`` (1.4826 scales MAD to σ under
+    ``|x − median| > OUTLIER_K · 1.4826 · MAD`` (1.4826 scales MAD to σ under
     normality — the robust z-score). Mean/stddev-based thresholds (the
     reference's incident condition, incident_detector.py:285-289) are
     dragged by the very outliers they hunt; median/MAD has a 50%
@@ -210,7 +211,7 @@ def robust_outlier_violations(
         with_med.join(F.broadcast(mad), "__part")
         .where(
             F.abs(F.col("__x") - F.col("med"))
-            > F.lit(k) * F.lit(1.4826) * F.greatest(F.col("mad"), F.lit(1e-12))
+            > F.lit(OUTLIER_K) * F.lit(1.4826) * F.greatest(F.col("mad"), F.lit(1e-12))
         )
         .select(
             F.col("__part").alias(part_col),

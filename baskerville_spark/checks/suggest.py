@@ -23,7 +23,7 @@ Design (and the 100-TB story):
 - **Pass 2 — value sets ONLY for columns pass 1 proved low-cardinality.**
   ``collect_set`` state is unbounded on a high-cardinality column, so the
   membership pass never runs blind: it scans once more, pruned to exactly
-  the string columns whose verified distinct count is <= ``max_members``,
+  the string columns whose verified distinct count is <= 20,
   and collects one bounded row. (Deequ's histogram pass has the same
   two-phase shape for the same reason.)
 - The suggestion RULES are pure functions of the profile, so the whole
@@ -75,25 +75,20 @@ def _round6(v: float, edge: float, up: bool) -> float:
     return r
 
 
-def suggest_constraints(
-    df: DataFrame,
-    max_members: int = 20,
-    low_null_max: float = 0.05,
-    pad: float = 1.25,
-) -> DataFrame:
+def suggest_constraints(df: DataFrame) -> DataFrame:
     """Profile ``df`` (2 bounded passes) and return suggested-constraint rows.
 
     Rules, each a pure function of the profile:
 
     - ``completeness``: null_rate == 0 -> threshold 0.0; 0 < rate <=
-      ``low_null_max`` -> threshold round(rate * pad, 6) (headroom so the
+      0.05 -> threshold round(rate * 1.25, 6) (headroom so the
       suite doesn't flap on the next batch), rounded up instead when
       nearest rounding falls below the observed rate; rate above that ->
       no completeness suggestion (the column is structurally sparse).
     - ``unique``: non-null count == row count == distinct count.
     - ``bounds`` (numeric columns): observed [min, max], rounded to 6
       decimals outward where nearest rounding would exclude min or max.
-    - ``membership`` (string columns, 1 <= distinct <= ``max_members``):
+    - ``membership`` (string columns, 1 <= distinct <= 20):
       the sorted observed value set, comma-joined.
 
     Output schema: (col_name, kind, threshold, lo, hi, members, n_rows),
@@ -116,12 +111,12 @@ def suggest_constraints(
     member_cols = [
         c for c in cols
         if isinstance(dtypes[c], T.StringType)
-        and 1 <= int(prof[f"__nd_{c}"]) <= max_members
+        and 1 <= int(prof[f"__nd_{c}"]) <= 20
     ]
     members: dict[str, str] = {}
     if member_cols:
         # second scan pruned to the PROVEN low-cardinality columns; state
-        # bounded by max_members per column.
+        # bounded by 20 values per column.
         row = df.select(*member_cols).agg(*[
             F.array_join(F.sort_array(F.collect_set(F.col(c))), ",")
             .alias(f"__m_{c}")
@@ -135,9 +130,9 @@ def suggest_constraints(
         null_rate = (n - nn) / n if n else 0.0
         if null_rate == 0.0:
             out.append((c, "completeness", 0.0, None, None, None, n))
-        elif null_rate <= low_null_max:
+        elif null_rate <= 0.05:
             out.append((c, "completeness",
-                        _round6(max(null_rate * pad, null_rate), null_rate,
+                        _round6(max(null_rate * 1.25, null_rate), null_rate,
                                 True),
                         None, None, None, n))
         if n > 0 and nn == n and nd == n:

@@ -158,8 +158,8 @@ def bounds(name: str, column: str, lo, hi, max_rate: float = 0.0) -> Constraint:
     return Constraint(name, "bounds", column, max_rate, (lo, hi))
 
 
-def pattern(name: str, column: str, regex: str, max_rate: float = 0.0) -> Constraint:
-    return Constraint(name, "pattern", column, max_rate, (regex,))
+def pattern(name: str, column: str, regex: str) -> Constraint:
+    return Constraint(name, "pattern", column, 0.0, (regex,))
 
 
 def membership(name: str, column: str, allowed: Sequence,

@@ -117,18 +117,13 @@ def reencode(clips: DataFrame, to_codec: str) -> DataFrame:
     return audio.map_payloads(clips, _reenc)
 
 
-def content_duplicate_pairs(fps: DataFrame, exact: bool = True) -> DataFrame:
-    """(clip_id_a, clip_id_b) pairs sharing a fingerprint (a < b).
-
-    ``exact=True`` joins on content_md5 (bit-identical decoded signal —
-    lossless-container dups); ``exact=False`` joins on envelope_fp (robust
-    to mild lossy re-encoding, with the usual LSH-style caveat that a
-    bucket match is a CANDIDATE to verify). Join carries only
-    (fingerprint, id) — payloads and PCM never shuffle.
+def content_duplicate_pairs(fps: DataFrame) -> DataFrame:
+    """(clip_id_a, clip_id_b) pairs sharing a content_md5 (a < b): a
+    bit-identical decoded signal, the lossless-container dups. Join
+    carries only (fingerprint, id) — payloads and PCM never shuffle.
     """
-    key = "content_md5" if exact else "envelope_fp"
-    slim = fps.where(F.col("decode_ok") & F.col(key).isNotNull()).select(
-        F.col(key).alias("k"), F.col("clip_id")
+    slim = fps.where(F.col("decode_ok") & F.col("content_md5").isNotNull()).select(
+        F.col("content_md5").alias("k"), F.col("clip_id")
     )
     a = slim.select(F.col("k"), F.col("clip_id").alias("clip_id_a"))
     b = slim.select(F.col("k"), F.col("clip_id").alias("clip_id_b"))
@@ -149,9 +144,7 @@ ALIGN_SCHEMA = T.StructType(
     ]
 )
 
-def audio_align_offsets(
-    clips: DataFrame, candidates: DataFrame, frame: int = 64
-) -> DataFrame:
+def audio_align_offsets(clips: DataFrame, candidates: DataFrame) -> DataFrame:
     """Offset recovery for candidate dup pairs: where inside ``twin`` does
     ``base`` start? The padding/delay variant that content_md5 structurally
     cannot catch (k prepended silence samples change every byte of the
@@ -166,7 +159,7 @@ def audio_align_offsets(
     candidate row; payloads meet a shuffle only for candidate pairs (the
     documented overlay/concat exception), then one Arrow pass per pair:
 
-    1. coarse: per-``frame`` abs-sum envelopes, exact int64
+    1. coarse: abs-sum envelopes of 64-sample frames, exact int64
        cross-correlation (np.correlate) over frames → candidate frame lag;
     2. refine: exact int64 dot products over the ±1-frame sample window
        around the coarse lag, ties to the SMALLEST offset.
@@ -180,6 +173,7 @@ def audio_align_offsets(
     twin is shorter than the base, or the base is silent (zero energy,
     ratio undefined) are dropped.
     """
+    frame = 64
     base_side = clips.select(
         F.col("clip_id").alias("base_id"),
         F.col("bytes").alias("__bytes_a"),

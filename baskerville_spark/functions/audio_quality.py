@@ -15,8 +15,8 @@ as the SNR invariant (checks/invariants.py):
   carries (``part_id``, ``clip_id``) pass through, cast to the declared
   type; a missing ``part_id`` becomes typed NULLs. ``decode_ok`` is True
   when the payload is non-NULL, decodes to at least one sample, and the
-  kernel accepts the clip — the pitch kernel rejects ``len <= min_lag``,
-  the balance kernel ``len < n_channels``. Rejected rows get ``fail``
+  kernel accepts the clip — the pitch kernel rejects ``len <= 2``, the
+  balance kernel ``len < 2``. Rejected rows get ``fail``
   (all NULL here), so a failed clip is reported, never dropped.
 - ``map_payloads`` rewrites or fans out rows with every other column
   carried; clips without decodable samples, and clips the kernel returns
@@ -46,6 +46,10 @@ from baskerville_spark import audio
 
 FULL_SCALE = 32768.0
 CLIP_LEVEL = 32767  # |sample| >= this counts as clipped
+SILENCE_LEVEL = 100  # |sample| <= this counts as silence
+MIN_GAP = 64  # interior silence runs this long split utterances
+BANDWIDTH_N_FFT = 256  # rFFT size of ``audio_bandwidth``
+DC_SUSPECT_FRAC = 0.02  # |dc_frac| above which ``audio_dc_offset`` flags a clip
 
 
 def _per_clip(clips: DataFrame, schema: T.StructType, kernel) -> DataFrame:
@@ -67,17 +71,17 @@ def _fft_window(pcm: np.ndarray, n_fft: int) -> np.ndarray:
     return np.pad(x, (0, n_fft - len(x)))
 
 
-def _utterance_spans(voiced: np.ndarray, min_gap: int) -> list[tuple[int, int]]:
+def _utterance_spans(voiced: np.ndarray) -> list[tuple[int, int]]:
     """Voiced-to-voiced spans of the voiced sample indices, split at every
-    interior silence run of >= ``min_gap`` samples."""
-    gaps = np.flatnonzero(np.diff(voiced) - 1 >= min_gap)
+    interior silence run of >= ``MIN_GAP`` samples."""
+    gaps = np.flatnonzero(np.diff(voiced) - 1 >= MIN_GAP)
     starts = np.concatenate([[0], gaps + 1])
     ends = np.concatenate([gaps, [len(voiced) - 1]])
     return [(int(voiced[a]), int(voiced[b]) + 1) for a, b in zip(starts, ends)]
 
 
-def _voiced(pcm: np.ndarray, threshold: int) -> np.ndarray:
-    return np.flatnonzero(np.abs(pcm.astype(np.int32)) > threshold)
+def _voiced(pcm: np.ndarray) -> np.ndarray:
+    return np.flatnonzero(np.abs(pcm.astype(np.int32)) > SILENCE_LEVEL)
 
 
 LOUDNESS_SCHEMA = T.StructType(
@@ -154,10 +158,10 @@ def _dc(pcm: np.ndarray) -> tuple:
     return len(pcm), float(pcm.astype(np.float64).mean())
 
 
-def audio_dc_offset(clips: DataFrame, suspect_frac: float = 0.02) -> DataFrame:
+def audio_dc_offset(clips: DataFrame) -> DataFrame:
     """Per-clip DC-bias QA: ``dc_mean`` (mean sample value, full scale
     32768), ``dc_frac`` (= dc_mean/32768) and ``dc_suspect``
-    (|dc_frac| > ``suspect_frac``, default 2% of full scale — the usual
+    (|dc_frac| > ``DC_SUSPECT_FRAC``, 2% of full scale — the usual
     mastering tolerance). A DC-biased upload (asymmetric preamp, bad
     ADC coupling) halves usable headroom and poisons every downstream
     energy/VAD/FFT stat, yet is invisible to peak/RMS checks because the
@@ -167,7 +171,7 @@ def audio_dc_offset(clips: DataFrame, suspect_frac: float = 0.02) -> DataFrame:
 
     One Arrow pass; only the decode-requiring scalar (the mean) crosses
     the UDF boundary — the normalized fraction and the policy flag are
-    native Column algebra so ``suspect_frac`` never forces a re-decode.
+    native Column algebra so the threshold never forces a re-decode.
     Reference seam: Baskerville has no audio-signal operators (its
     features are request-set statistics, features/feature_*.py); this is
     a from-scratch extension for the audio graft cell, gated analytically
@@ -176,7 +180,7 @@ def audio_dc_offset(clips: DataFrame, suspect_frac: float = 0.02) -> DataFrame:
     out = _per_clip(clips, DC_SCHEMA, _dc)
     dc_frac = F.col("dc_mean") / F.lit(FULL_SCALE)
     return out.withColumn("dc_frac", dc_frac).withColumn(
-        "dc_suspect", F.abs(F.col("dc_frac")) > F.lit(float(suspect_frac))
+        "dc_suspect", F.abs(F.col("dc_frac")) > F.lit(DC_SUSPECT_FRAC)
     )
 
 
@@ -212,38 +216,37 @@ def audio_resample(clips: DataFrame, target_sr: int) -> DataFrame:
     return audio.map_payloads(clips, _res, args=("codec", "sr_hz"))
 
 
-def audio_downmix(clips: DataFrame, n_channels: int = 2) -> DataFrame:
-    """Downmix interleaved multi-channel PCM to mono (per-frame mean,
+def audio_downmix(clips: DataFrame) -> DataFrame:
+    """Downmix interleaved stereo PCM to mono (per-frame mean,
     round-half-even) in one decode→transform→encode Arrow pass, preserving
     metadata. A trailing partial frame (stream length not divisible by the
     channel count) is truncated — the standard tolerant-reader behavior
     for corrupt interleaving. Rows that fail to decode are dropped.
 
-    Channel count rides in as a parameter because the clip schema
-    (BASELINE input_hint) is mono — this is the ingest-side normalizer
-    that FEEDS that schema from multi-channel masters.
+    The clip schema (BASELINE input_hint) is mono — this is the
+    ingest-side normalizer that FEEDS that schema from stereo masters.
     """
 
     def _mix(pcm: np.ndarray, codec: str) -> list[dict]:
-        if len(pcm) < n_channels:
+        if len(pcm) < 2:
             return []
-        frames = len(pcm) // n_channels
-        x = pcm[: frames * n_channels].astype(np.float64)
-        mono = np.rint(x.reshape(frames, n_channels).mean(axis=1))
+        frames = len(pcm) // 2
+        x = pcm[: frames * 2].astype(np.float64)
+        mono = np.rint(x.reshape(frames, 2).mean(axis=1))
         out_pcm = np.clip(mono, -32768, 32767).astype(np.int16)
         return [{"bytes": audio.encode(out_pcm, codec)}]
 
     return audio.map_payloads(clips, _mix, args=("codec",))
 
 
-def audio_trim_silence(clips: DataFrame, threshold: int = 100) -> DataFrame:
-    """Strip leading/trailing samples with |x| <= ``threshold`` (the
+def audio_trim_silence(clips: DataFrame) -> DataFrame:
+    """Strip leading/trailing samples with |x| <= ``SILENCE_LEVEL`` (the
     classic pre-ASR silence trim) in one decode→slice→encode Arrow pass.
     All-silent clips are dropped (nothing left to keep). Interior silence
     is untouched — this is an endpoint trim, not a VAD."""
 
     def _trim(pcm: np.ndarray, codec: str) -> list[dict]:
-        loud = _voiced(pcm, threshold)
+        loud = _voiced(pcm)
         if len(loud) == 0:
             return []
         return [{"bytes": audio.encode(pcm[loud[0]: loud[-1] + 1], codec)}]
@@ -251,15 +254,15 @@ def audio_trim_silence(clips: DataFrame, threshold: int = 100) -> DataFrame:
     return audio.map_payloads(clips, _trim, args=("codec",))
 
 
-def audio_normalize(clips: DataFrame, target_peak: int = 20000) -> DataFrame:
-    """Peak-normalize each payload to ``target_peak`` (gain staging before
+def audio_normalize(clips: DataFrame) -> DataFrame:
+    """Peak-normalize each payload to a 20000 peak (gain staging before
     training): decode -> gain = target/peak -> round -> clip -> re-encode,
     one Arrow pass, schema preserved. All-silent clips (peak 0) are dropped
     — there is no gain that normalizes silence. Peaks already at target are
     re-encoded unchanged (gain 1.0 rounds to identity).
 
     float64 gain keeps the round-trip exact where it matters: for any
-    sample at the old peak the output is exactly ``target_peak`` (relative
+    sample at the old peak the output is exactly 20000 (relative
     double error ~1e-12 « the 0.5 rounding window) — which is what the
     q90 gate pins through the real decode→scale→encode pipeline.
     """
@@ -268,7 +271,7 @@ def audio_normalize(clips: DataFrame, target_peak: int = 20000) -> DataFrame:
         peak = int(np.abs(pcm.astype(np.int32)).max())
         if peak == 0:
             return []
-        gain = float(target_peak) / peak
+        gain = 20000.0 / peak
         out_pcm = np.clip(
             np.rint(pcm.astype(np.float64) * gain), -32768, 32767
         ).astype(np.int16)
@@ -359,29 +362,26 @@ PITCH_SCHEMA = T.StructType(
 )
 
 
-def audio_pitch_period(
-    clips: DataFrame, min_lag: int = 2, max_lag: int = 64, window: int = 512
-) -> DataFrame:
+def audio_pitch_period(clips: DataFrame) -> DataFrame:
     """Fundamental-period estimate per clip: exact int64 autocorrelation
-    over the first ``window`` samples, argmax lag in [min_lag, max_lag]
-    (ties -> smallest lag, i.e. the fundamental, not a harmonic multiple).
-    The screen for mislabeled sample rates and tone-like junk uploads.
-    Clips of ``min_lag`` samples or fewer have no lag to test and report
-    ``decode_ok`` False.
+    over the first 512 samples, argmax lag in [2, 64] (ties -> smallest
+    lag, i.e. the fundamental, not a harmonic multiple). The screen for
+    mislabeled sample rates and tone-like junk uploads. Clips of 2 samples
+    or fewer have no lag to test and report ``decode_ok`` False.
 
-    Cost is O(window * max_lag) integer MACs per clip — constant per row,
+    Cost is O(512 * 64) integer MACs per clip — constant per row,
     independent of clip length; at scale the FFT form (O(W log W) via
-    rfft->|.|^2->irfft) is the drop-in when max_lag grows, same
+    rfft->|.|^2->irfft) is the drop-in when the lag range grows, same
     decode-once Arrow pass either way. int64 exactness is what lets the
     q92 gate pin the argmax against the planted square-wave period.
     """
 
     def _pitch(pcm: np.ndarray) -> tuple | None:
-        if len(pcm) <= min_lag:
+        if len(pcm) <= 2:
             return None
-        x = pcm[:window].astype(np.int64)
+        x = pcm[:512].astype(np.int64)
         best_lag, best_r = None, None
-        for lag in range(min_lag, min(max_lag, len(x) - 1) + 1):
+        for lag in range(2, min(64, len(x) - 1) + 1):
             r = int(np.dot(x[:-lag], x[lag:]))
             if best_r is None or r > best_r:
                 best_r, best_lag = r, lag
@@ -443,20 +443,18 @@ def audio_segment(clips: DataFrame, segment_samples: int) -> DataFrame:
     return _emit_spans(clips, spans)
 
 
-def audio_split_on_silence(
-    clips: DataFrame, threshold: int = 100, min_gap: int = 64
-) -> DataFrame:
+def audio_split_on_silence(clips: DataFrame) -> DataFrame:
     """Interior silence splitting (VAD-style utterance segmentation, the
     step past audio_trim_silence): endpoints are trimmed, then the clip
-    splits at every interior silence run of >= ``min_gap`` samples;
+    splits at every interior silence run of >= ``MIN_GAP`` samples;
     shorter interior pauses stay inside their segment. One output row per
     voiced segment (seg_idx, n_samples appended, payload re-encoded under
     the row's codec); all-silent clips drop. Same decode-once, map-side,
     data-dependent-fan-out shape as audio_segment."""
 
     def spans(pcm):
-        voiced = _voiced(pcm, threshold)
-        return _utterance_spans(voiced, min_gap) if len(voiced) else []
+        voiced = _voiced(pcm)
+        return _utterance_spans(voiced) if len(voiced) else []
 
     return _emit_spans(clips, spans)
 
@@ -513,13 +511,11 @@ BANDWIDTH_SCHEMA = T.StructType(
 )
 
 
-def audio_bandwidth(
-    clips: DataFrame, n_fft: int = 256, energy_frac: float = 0.99
-) -> DataFrame:
+def audio_bandwidth(clips: DataFrame) -> DataFrame:
     """Spectral rolloff per clip: the smallest rFFT bin (DC excluded) whose
-    cumulative energy reaches ``energy_frac`` of the total, over the first
-    ``n_fft`` samples (zero-padded). ``band_frac`` = rolloff/(n_fft/2) —
-    occupied fraction of the declared band.
+    cumulative energy reaches 99% of the total, over the first
+    ``BANDWIDTH_N_FFT`` samples (zero-padded). ``band_frac`` =
+    rolloff/(BANDWIDTH_N_FFT/2) — occupied fraction of the declared band.
 
     The band-limit QA screen the spectral-features op doesn't give
     (dominant_bin sees the loudest component; rolloff sees where the
@@ -530,6 +526,7 @@ def audio_bandwidth(
     clip, narrow rows out; threshold/verdict joins stay Column algebra
     downstream. Silent clips keep NULL rolloff (no energy to place).
     """
+    n_fft = BANDWIDTH_N_FFT  # read on the driver: the kernel ships its value
     half = n_fft // 2
 
     def _bw(pcm: np.ndarray) -> tuple:
@@ -537,7 +534,7 @@ def audio_bandwidth(
         total = e.sum()
         if total <= 0:
             return None, None  # silent: rolloff stays NULL
-        j = int(np.searchsorted(np.cumsum(e), energy_frac * total)) + 1
+        j = int(np.searchsorted(np.cumsum(e), 0.99 * total)) + 1
         return j, j / half
 
     return _per_clip(clips, BANDWIDTH_SCHEMA, _bw)
@@ -556,15 +553,13 @@ VAD_SCHEMA = T.StructType(
 )
 
 
-def audio_vad_stats(
-    clips: DataFrame, threshold: int = 100, min_gap: int = 64
-) -> DataFrame:
+def audio_vad_stats(clips: DataFrame) -> DataFrame:
     """Per-clip VAD summary — the sampling/QA metrics WITHOUT the
     segmentation fan-out: utterance count, speech sample count/fraction,
     and the longest interior silence run. Semantics exactly shared with
-    :func:`audio_split_on_silence` (voiced = |x| > threshold; utterances
-    split at interior silence >= min_gap; an utterance span runs
-    voiced-to-voiced, so sub-min_gap pauses count as speech) — the
+    :func:`audio_split_on_silence` (voiced = |x| > SILENCE_LEVEL;
+    utterances split at interior silence >= MIN_GAP; an utterance span
+    runs voiced-to-voiced, so shorter pauses count as speech) — the
     summary a corpus curator filters/samples on (speech_frac < 0.3 =
     mostly silence; n_utterances = dialogue density) before paying the
     per-segment row explosion. One decode pass, one narrow row per clip;
@@ -574,11 +569,11 @@ def audio_vad_stats(
 
     def _vad(pcm: np.ndarray) -> tuple:
         n = len(pcm)
-        voiced = _voiced(pcm, threshold)
+        voiced = _voiced(pcm)
         if len(voiced) == 0:
             return n, 0, 0, 0.0, 0
         runs = np.diff(voiced) - 1  # interior silence lengths
-        spans = _utterance_spans(voiced, min_gap)
+        spans = _utterance_spans(voiced)
         speech = sum(e - s for s, e in spans)
         return n, len(spans), speech, speech / n, int(runs.max()) if len(runs) else 0
 

@@ -32,6 +32,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+N_HASHES = 5  # bloom bit positions per key
+
 
 def _base_hashes(col: F.Column) -> tuple[F.Column, F.Column]:
     """Two independent JVM-side 64-bit hashes of the key; the k bloom
@@ -62,7 +64,7 @@ def _positions(col: F.Column, n_hashes: int, m_bits: int) -> list[F.Column]:
 
 
 def build_bloom_bitmap(
-    dim: DataFrame, key: str, m_bits: int = 1 << 20, n_hashes: int = 5
+    dim: DataFrame, key: str, m_bits: int, n_hashes: int
 ) -> np.ndarray:
     """One boolean numpy bitmap (m_bits packed bits via np.packbits would
     halve memory 8x; kept as bool[] for O(1) vectorized gather) covering
@@ -93,7 +95,6 @@ def bloom_semi_join(
     fact_key: str,
     dim_key: str | None = None,
     m_bits: int = 1 << 20,
-    n_hashes: int = 5,
 ) -> DataFrame:
     """``fact`` rows whose ``fact_key`` exists in ``dim[dim_key]`` —
     exactly a left-semi join, computed as bloom-prune (map-side, no fact
@@ -107,7 +108,7 @@ def bloom_semi_join(
     dim_key = dim_key or fact_key
     spark = fact.sparkSession
     bitmap_bc = spark.sparkContext.broadcast(
-        build_bloom_bitmap(dim, dim_key, m_bits=m_bits, n_hashes=n_hashes)
+        build_bloom_bitmap(dim, dim_key, m_bits, N_HASHES)
     )
 
     @F.pandas_udf("boolean")
@@ -117,7 +118,7 @@ def bloom_semi_join(
         r1 = h1.to_numpy(dtype=np.int64) % m
         r2 = h2.to_numpy(dtype=np.int64) % m
         ok = np.ones(len(r1), dtype=bool)
-        for j in range(n_hashes):
+        for j in range(N_HASHES):
             ok &= bm[(r1 + np.int64(j) * r2) % m]
         return pd.Series(ok)
 

@@ -22,8 +22,8 @@ corpus, and the corpus is never touched again). Each merge round is then:
 Rounds checkpoint through the same ``_Ckpt`` protocol as the connected-
 components loops (graph.py): persist-before-checkpoint, superseded files
 deleted, lineage truncated — n_merges=32k rounds must not build a 32k-step
-plan. Words that shrink to one symbol stop producing pairs and the
-``min_freq`` floor stops training when the best pair is noise.
+plan. Words that shrink to one symbol stop producing pairs, and training
+stops when the best pair occurs only once (noise, not a merge).
 """
 
 from __future__ import annotations
@@ -77,11 +77,7 @@ def _apply_merge(words: DataFrame, l: str, r: str) -> DataFrame:
     )
 
 
-def train_bpe_merges(
-    docs: DataFrame,
-    n_merges: int,
-    min_freq: int = 2,
-) -> DataFrame:
+def train_bpe_merges(docs: DataFrame, n_merges: int) -> DataFrame:
     """Learn the top ``n_merges`` BPE merges; returns (merge_rank, lsym,
     rsym, pair_count), deterministic: pair count desc, then (lsym, rsym)
     lexicographic on ties."""
@@ -111,7 +107,7 @@ def train_bpe_merges(
         if pending:
             ckpt.committed(words)
             pending = False
-        if best is None or best["total"] < min_freq:
+        if best is None or best["total"] < 2:
             break
         l, r, total = best["l"], best["r"], int(best["total"])
         merges.append((rank, l, r, total))

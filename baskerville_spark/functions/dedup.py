@@ -32,6 +32,9 @@ from pyspark.sql import functions as F
 
 from baskerville_spark.checks.uniqueness import salted_exemplars
 
+MINHASH_NUM_HASHES = 32  # signature length
+MINHASH_BANDS = 8  # LSH bands of MINHASH_NUM_HASHES // MINHASH_BANDS rows
+
 
 def _tokens():
     return F.split(F.lower(F.col("text")), r"\s+")
@@ -148,6 +151,12 @@ def ngram_jaccard_pairs(
     blowup at corpus scale); the metric is Jaccard over the filtered
     shingle space — identical to true Jaccard when nothing is filtered.
     """
+    return _jaccard_pairs_over(_low_df_shingles(df, n, max_df), threshold, candidates=None)
+
+
+def _low_df_shingles(df: DataFrame, n: int, max_df: int) -> DataFrame:
+    """``word_shingles`` minus the stop shingles: those in more than
+    ``max_df`` documents."""
     sh = word_shingles(df, n)
     low_df = (
         sh.groupBy("shingle")
@@ -155,37 +164,34 @@ def ngram_jaccard_pairs(
         .where(F.col("df_") <= max_df)
         .select("shingle")
     )
-    filtered = sh.join(low_df, "shingle", "left_semi")
-    return _jaccard_pairs_over(filtered, threshold, candidates=None)
+    return sh.join(low_df, "shingle", "left_semi")
 
 
-def minhash_signatures(df: DataFrame, n: int = 5, num_hashes: int = 32) -> DataFrame:
+def minhash_signatures(df: DataFrame, n: int = 5) -> DataFrame:
     """(id, sig: array<bigint>) MinHash signature — one groupBy, xxhash64-based."""
     sh = word_shingles(df, n)
     mins = [
         F.min(F.xxhash64(F.lit(i), F.col("shingle"))).alias(f"h{i}")
-        for i in range(num_hashes)
+        for i in range(MINHASH_NUM_HASHES)
     ]
     wide = sh.groupBy("id").agg(*mins)
     return wide.select(
-        "id", F.array(*[F.col(f"h{i}") for i in range(num_hashes)]).alias("sig")
+        "id", F.array(*[F.col(f"h{i}") for i in range(MINHASH_NUM_HASHES)]).alias("sig")
     )
 
 
 def minhash_lsh_pairs(
     df: DataFrame,
     n: int = 5,
-    num_hashes: int = 32,
-    bands: int = 8,
-    verify_threshold: float | None = 0.5,
+    verify_threshold: float = 0.5,
 ) -> DataFrame:
-    """Near-dup candidate pairs via banded MinHash; optionally verified with
-    exact shingle Jaccard on the candidates ONLY (the cheap-then-exact
-    pattern): shingles are left-semi-joined to candidate ids before the
-    verify pair join, so the exact pass costs O(candidate docs), never the
-    full-corpus quadratic join."""
-    rows_per_band = num_hashes // bands
-    sigs = minhash_signatures(df, n, num_hashes)
+    """Near-dup pairs via banded MinHash, verified with exact shingle
+    Jaccard >= ``verify_threshold`` on the candidates ONLY (the
+    cheap-then-exact pattern): shingles are left-semi-joined to candidate
+    ids before the verify pair join, so the exact pass costs O(candidate
+    docs), never the full-corpus quadratic join."""
+    rows_per_band = MINHASH_NUM_HASHES // MINHASH_BANDS
+    sigs = minhash_signatures(df, n)
     banded = sigs.select(
         "id",
         F.explode(
@@ -197,7 +203,7 @@ def minhash_lsh_pairs(
                             *[F.col("sig")[b * rows_per_band + r] for r in range(rows_per_band)]
                         ).alias("bucket"),
                     )
-                    for b in range(bands)
+                    for b in range(MINHASH_BANDS)
                 ]
             )
         ).alias("bb"),
@@ -210,10 +216,7 @@ def minhash_lsh_pairs(
         .select("id_a", "id_b")
         .distinct()
     )
-    if verify_threshold is None:
-        return cand
-    sh = word_shingles(df, n)
-    return _jaccard_pairs_over(sh, verify_threshold, candidates=cand)
+    return _jaccard_pairs_over(word_shingles(df, n), verify_threshold, candidates=cand)
 
 
 def _token_hash(col, hasher: str):
@@ -270,21 +273,14 @@ def simhash(df: DataFrame, hasher: str = "xxhash64") -> DataFrame:
     return out.select("id", "simhash", chunks.alias("chunks"))
 
 
-def simhash_near_dups(
-    df: DataFrame,
-    max_hamming: int = 3,
-    hasher: str = "xxhash64",
-) -> DataFrame:
-    """(id_a, id_b, hamming) pairs with SimHash Hamming distance <= max_hamming.
+def simhash_near_dups(df: DataFrame, hasher: str = "xxhash64") -> DataFrame:
+    """(id_a, id_b, hamming) pairs with SimHash Hamming distance <= 3.
 
     Pigeonhole banding: Hamming <= 3 over 64 bits implies at least one of
     the four 16-bit chunks is EQUAL, so the candidate join is an equi-join
-    on (band, chunk) — never all-pairs. Candidates are then filtered with
-    the exact popcount of the XOR. ``max_hamming`` must be < 4 for the
-    4-chunk pigeonhole to be lossless.
+    on (band, chunk) — never all-pairs (and lossless only up to distance
+    3). Candidates are then filtered with the exact popcount of the XOR.
     """
-    if max_hamming >= 4:
-        raise ValueError("4-chunk banding is only lossless for max_hamming <= 3")
     s = simhash(df, hasher=hasher)
     exploded = s.select(
         "id", "simhash", F.posexplode("chunks").alias("band", "chunk")
@@ -305,7 +301,7 @@ def simhash_near_dups(
         cand.withColumn(
             "hamming", F.bit_count(F.col("sim_a").bitwiseXOR(F.col("sim_b"))).cast("int")
         )
-        .where(F.col("hamming") <= max_hamming)
+        .where(F.col("hamming") <= 3)
         .select("id_a", "id_b", "hamming")
     )
 
@@ -389,12 +385,7 @@ def tfidf_cosine_pairs(
     )
 
 
-def shingle_containment_pairs(
-    df: DataFrame,
-    n: int = 3,
-    threshold: float = 0.8,
-    max_df: int = 1000,
-) -> DataFrame:
+def shingle_containment_pairs(df: DataFrame, max_df: int = 1000) -> DataFrame:
     """ASYMMETRIC near-dup: containment(A⊆B) = |A∩B| / |A| — the metric
     that catches a document plus its truncation/excerpt, which Jaccard
     structurally under-scores (a 10%-length excerpt of a clean doc has
@@ -403,23 +394,15 @@ def shingle_containment_pairs(
     and quote dedup; a from-scratch extension (the reference dedups
     exact keys only).
 
-    Emits (id_a, id_b, containment_a, containment_b) for pairs where
-    EITHER direction >= threshold — both directions ride the same pair
-    aggregate, no second join. Same scale shape as
+    Emits (id_a, id_b, containment_a, containment_b) over word 3-gram
+    shingles for pairs where EITHER direction >= 0.8 — both directions ride
+    the same pair aggregate, no second join. Same scale shape as
     ``ngram_jaccard_pairs``: inverted shingle index, max_df stop-shingle
     guard applied before the join AND the sizes (the metric is
     containment over the filtered space), window-carried sizes keeping
     the a/b branches ReuseExchange-identical.
     """
-    sh = word_shingles(df, n)
-    low_df = (
-        sh.groupBy("shingle")
-        .agg(F.count(F.lit(1)).alias("df_"))
-        .where(F.col("df_") <= max_df)
-        .select("shingle")
-    )
-    filtered = sh.join(low_df, "shingle", "left_semi")
-    sized = filtered.withColumn(
+    sized = _low_df_shingles(df, 3, max_df).withColumn(
         "n_sh", F.count(F.lit(1)).over(Window.partitionBy("id"))
     )
     a = sized.select(F.col("id").alias("id_a"), F.col("n_sh").alias("n_a"), "shingle")
@@ -436,19 +419,15 @@ def shingle_containment_pairs(
             (F.col("n_common") / F.col("n_b")).cast("double").alias("containment_b"),
         )
         .where(
-            (F.col("containment_a") >= threshold)
-            | (F.col("containment_b") >= threshold)
+            (F.col("containment_a") >= 0.8)
+            | (F.col("containment_b") >= 0.8)
         )
     )
 
 
-def decontaminate(
-    df: DataFrame,
-    benchmark: DataFrame,
-    n: int = 8,
-) -> DataFrame:
+def decontaminate(df: DataFrame, benchmark: DataFrame) -> DataFrame:
     """Benchmark decontamination: flag training documents sharing any word
-    n-gram with an evaluation/benchmark corpus (the GPT-3/Llama-style
+    8-gram with an evaluation/benchmark corpus (the GPT-3/Llama-style
     8-to-13-gram overlap filter run before every pretraining mix; the
     reference has no analog — its dedup is exact-key only).
 
@@ -463,10 +442,8 @@ def decontaminate(
     Returns (doc_id, n_contaminated_shingles) for contaminated docs only —
     the count is of DISTINCT shared n-grams (word_shingles dedupes per doc).
     """
-    bench_sh = (
-        word_shingles(benchmark, n).select("shingle").distinct()
-    )
-    train_sh = word_shingles(df, n)
+    bench_sh = word_shingles(benchmark, 8).select("shingle").distinct()
+    train_sh = word_shingles(df, 8)
     hits = train_sh.join(F.broadcast(bench_sh), "shingle", "left_semi")
     return (
         hits.groupBy("id")
@@ -526,16 +503,12 @@ def keep_canonical(
     return survivors, winners
 
 
-def dedup_lines(
-    docs: DataFrame,
-    min_line_chars: int = 1,
-) -> DataFrame:
+def dedup_lines(docs: DataFrame) -> DataFrame:
     """Cross-document line dedup (C4-style boilerplate removal): every
     line keeps exactly ONE occurrence corpus-wide — the (smallest doc id,
-    smallest line number) one — and loses all others; lines shorter than
-    ``min_line_chars`` are exempt (blank separators and one-word lines
-    are structure, not boilerplate). Returns (id, text_out, n_lines_kept,
-    n_lines_removed); documents whose every line was owned elsewhere
+    smallest line number) one — and loses all others; empty lines are
+    exempt (blank separators are structure, not boilerplate). Returns (id,
+    text_out, n_lines_kept, n_lines_removed); documents whose every line was owned elsewhere
     disappear (the C4 empty-doc drop).
 
     Shape: posexplode → ONE window keyed on the line text itself (the row
@@ -551,7 +524,7 @@ def dedup_lines(
     )
     w = Window.partitionBy("line")
     owner = F.min(F.struct("doc_id", "line_no")).over(w)
-    keep = (F.length("line") < min_line_chars) | (
+    keep = (F.length("line") < 1) | (
         F.struct(F.col("doc_id"), F.col("line_no")) == owner
     )
     kept = ln.select(

@@ -305,7 +305,6 @@ def update_feature_vector(
     specs: list[UpdateSpec],
     square_variance: bool = True,
     round_dp: int | None = 4,
-    broadcast_past: bool = False,
 ) -> DataFrame:
     """Merge a batch's fresh feature vectors with the cached past vectors.
 
@@ -320,10 +319,9 @@ def update_feature_vector(
     verbatim (it squares the stored variance — see :func:`_updated`);
     ``False`` computes the textbook pooled sample variance.
 
-    Scale: one equi-join on the group keys. ``broadcast_past=True`` hints
-    broadcast for a small cache; default lets AQE decide (sort-merge at
-    10^12 keys, both sides already hash-partitioned by key from their
-    groupBys).
+    Scale: one equi-join on the group keys; AQE picks the strategy
+    (sort-merge at 10^12 keys, both sides already hash-partitioned by key
+    from their groupBys).
     """
     p_df = past.select(
         *[F.col(k).alias(f"__p_{k}") for k in keys],
@@ -333,8 +331,6 @@ def update_feature_vector(
         ],
         F.lit(1).alias("__p_present"),
     )
-    if broadcast_past:
-        p_df = F.broadcast(p_df)
     cond = None
     for k in keys:
         piece = F.col(k).eqNullSafe(F.col(f"__p_{k}"))

@@ -177,9 +177,7 @@ def _require_integral_ids(vertices: DataFrame, edges: DataFrame) -> None:
                 )
 
 
-def star_edges(
-    buckets: DataFrame, id_col: str = "id", bucket_col: str = "bucket"
-) -> DataFrame:
+def star_edges(buckets: DataFrame, id_col: str = "id") -> DataFrame:
     """(id, bucket) membership rows -> (src, dst) star edges to each
     bucket's minimum id.
 
@@ -191,9 +189,9 @@ def star_edges(
     Multi-relation membership (same pair in several buckets) dedups via
     the final distinct over narrow (long, long) rows.
     """
-    roots = buckets.groupBy(bucket_col).agg(F.min(id_col).alias("__root"))
+    roots = buckets.groupBy("bucket").agg(F.min(id_col).alias("__root"))
     return (
-        buckets.join(roots, bucket_col)
+        buckets.join(roots, "bucket")
         .where(F.col(id_col) != F.col("__root"))
         .select(F.col(id_col).alias("src"), F.col("__root").alias("dst"))
         .distinct()
@@ -422,7 +420,6 @@ def connected_components_bigstar(vertices: DataFrame, edges: DataFrame) -> DataF
 def dedup_clusters(
     membership: DataFrame,
     id_col: str = "id",
-    bucket_col: str = "bucket",
     vertices: DataFrame | None = None,
     algorithm: str = "label",
 ) -> DataFrame:
@@ -447,7 +444,7 @@ def dedup_clusters(
         verts = membership.select(F.col(id_col).alias("id")).distinct()
     else:
         verts = vertices.select(F.col(id_col).alias("id")).distinct()
-    edges = star_edges(membership, id_col, bucket_col)
+    edges = star_edges(membership, id_col)
     if algorithm == "bigstar":
         labels = connected_components_bigstar(verts, edges)
     else:
@@ -465,9 +462,9 @@ def dedup_clusters(
         # checkpoints its labels, so nothing re-reads membership once this
         # function returns. Persisting unconditionally here costs an extra
         # job that measurably hurts the cheap-membership callers.
-        roots = membership.groupBy(bucket_col).agg(F.min(id_col).alias("__root"))
+        roots = membership.groupBy("bucket").agg(F.min(id_col).alias("__root"))
         seeds = (
-            membership.join(roots, bucket_col)
+            membership.join(roots, "bucket")
             .groupBy(F.col(id_col).alias("id"))
             .agg(F.min("__root").alias("label"))
         )
@@ -481,23 +478,19 @@ def dedup_clusters(
     )
 
 
-def prior_label_membership(
-    labels: DataFrame, id_col: str = "id", bucket_col: str = "bucket"
-) -> DataFrame:
+def prior_label_membership(labels: DataFrame, id_col: str = "id") -> DataFrame:
     """Fold a previous clustering run's (id, cluster_id) labels into
     bucket-membership rows — term (b) of ``incremental_membership``'s
     recipe, exposed separately for pipelines that assemble their own
     union. Each old cluster becomes one ``prior:<cluster>`` bucket
     (prefixed so it can never collide with a fingerprint bucket), which
     is connectivity-equivalent to the old component. Output columns are
-    named (``id_col``, ``bucket_col``) so the result unions cleanly with
-    membership tables using non-default names.
+    (``id_col``, ``bucket``) so the result unions cleanly with membership
+    tables whose id column has another name.
     """
     return labels.select(
         F.col(id_col).alias(id_col),
-        F.concat(F.lit("prior:"), F.col("cluster_id").cast("string")).alias(
-            bucket_col
-        ),
+        F.concat(F.lit("prior:"), F.col("cluster_id").cast("string")).alias("bucket"),
     )
 
 
@@ -506,7 +499,6 @@ def incremental_membership(
     prior_labels: DataFrame,
     retained_index: DataFrame,
     id_col: str = "id",
-    bucket_col: str = "bucket",
 ) -> DataFrame:
     """The full three-term membership for INCREMENTAL ``dedup_clusters``
     — at 10^12 rows a new ingest batch never re-fingerprints or
@@ -531,13 +523,11 @@ def incremental_membership(
     the 10^12-row index, so (c) costs one broadcast semi-join over the
     index scan, never a shuffle of the index.
     """
-    bridge = retained_index.select(id_col, bucket_col).join(
-        new_membership.select(bucket_col).distinct(), bucket_col, "left_semi"
+    bridge = retained_index.select(id_col, "bucket").join(
+        new_membership.select("bucket").distinct(), "bucket", "left_semi"
     )
     return (
-        new_membership.select(id_col, bucket_col)
+        new_membership.select(id_col, "bucket")
         .unionByName(bridge)
-        .unionByName(
-            prior_label_membership(prior_labels, id_col=id_col, bucket_col=bucket_col)
-        )
+        .unionByName(prior_label_membership(prior_labels, id_col=id_col))
     )

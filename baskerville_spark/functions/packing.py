@@ -31,11 +31,15 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+BIN_TOKENS = 512  # context-window length of ``pack_sequences``
+CHUNK_TOKENS = 100  # window length of ``chunk_documents``
+CHUNK_STRIDE = 80  # tokens between consecutive chunk starts
 
-def pack_sequences(df: DataFrame, bin_tokens: int = 512) -> DataFrame:
+
+def pack_sequences(df: DataFrame) -> DataFrame:
     """(doc_id, n_tokens, start_offset, bin_id): the context window each
     doc starts in when docs are concatenated in ``doc_id`` order and split
-    every ``bin_tokens`` tokens.
+    every ``BIN_TOKENS`` tokens.
 
     ``n_tokens`` counts the whitespace tokens of ``text``. Ids must be
     unique (they are the concatenation order). The ids are range-split
@@ -107,7 +111,7 @@ def pack_sequences(df: DataFrame, bin_tokens: int = 512) -> DataFrame:
         F.col("id").alias("doc_id"),
         "n_tokens",
         start.alias("start_offset"),
-        F.floor(start / F.lit(bin_tokens)).cast("bigint").alias("bin_id"),
+        F.floor(start / F.lit(BIN_TOKENS)).cast("bigint").alias("bin_id"),
     )
 
 
@@ -122,14 +126,10 @@ def packed_bin_summary(packed: DataFrame) -> DataFrame:
     )
 
 
-def chunk_documents(
-    df: DataFrame,
-    chunk_tokens: int = 100,
-    stride: int = 80,
-) -> DataFrame:
+def chunk_documents(df: DataFrame) -> DataFrame:
     """Sliding-window chunking: split each document into token windows of
-    ``chunk_tokens`` starting every ``stride`` tokens (overlap when
-    stride < chunk_tokens) — the RAG / long-document preprocessing step.
+    ``CHUNK_TOKENS`` starting every ``CHUNK_STRIDE`` tokens (overlapping)
+    — the RAG / long-document preprocessing step.
 
     Pure Column algebra: split -> sequence of starts -> posexplode ->
     slice; one narrow projection, no shuffle, whole-stage codegen
@@ -139,8 +139,8 @@ def chunk_documents(
     """
     toks = F.split(F.trim(F.col("text")), r"\s+")
     n = F.size(toks)
-    starts = F.sequence(F.lit(0), F.greatest(n - 1, F.lit(0)), F.lit(stride))
-    chunk = F.slice(F.col("__toks"), F.col("start_tok") + 1, chunk_tokens)
+    starts = F.sequence(F.lit(0), F.greatest(n - 1, F.lit(0)), F.lit(CHUNK_STRIDE))
+    chunk = F.slice(F.col("__toks"), F.col("start_tok") + 1, CHUNK_TOKENS)
     return (
         df.select(
             "doc_id",
@@ -152,7 +152,7 @@ def chunk_documents(
             "doc_id",
             "chunk_idx",
             "start_tok",
-            F.least(F.lit(chunk_tokens), F.col("__n") - F.col("start_tok"))
+            F.least(F.lit(CHUNK_TOKENS), F.col("__n") - F.col("start_tok"))
             .cast("int")
             .alias("n_tokens_chunk"),
             F.md5(F.concat_ws(" ", chunk)).alias("chunk_md5"),

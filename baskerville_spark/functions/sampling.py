@@ -47,13 +47,8 @@ def hash_threshold_keep(id_expr: Column, frac: float) -> Column:
     return hash_bucket(id_expr) < F.lit(int(frac * N_BUCKETS) + 1)
 
 
-def mixture_sample(
-    df,
-    target_weights: dict[str, float],
-    group_col: str = "source",
-    id_col: str = "doc_id",
-):
-    """Downsample to a target group mixture WITHOUT upsampling — the
+def mixture_sample(df, target_weights: dict[str, float]):
+    """Downsample to a target ``source`` mixture WITHOUT upsampling — the
     pretraining domain-rebalancing pass (e.g. "make the mix 40% web /
     25% books / ..."): find the largest total T achievable given each
     group's population (T = min_g n_g / w_g), then keep each group at
@@ -69,7 +64,7 @@ def mixture_sample(
     from pyspark.sql import functions as F
 
     counts = {
-        r[0]: r[1] for r in df.groupBy(group_col).count().collect()
+        r[0]: r[1] for r in df.groupBy("source").count().collect()
     }
     present = {g: w for g, w in target_weights.items() if counts.get(g)}
     if not present:
@@ -81,21 +76,21 @@ def mixture_sample(
     }
     thr = F.element_at(
         F.create_map(*[F.lit(x) for kv in sorted(thr_map.items()) for x in kv]),
-        F.col(group_col),
+        F.col("source"),
     )
-    return df.where(hash_bucket(F.col(id_col)) < thr)
+    return df.where(hash_bucket(F.col("doc_id")) < thr)
 
 
-def train_val_test_split(id_col: str = "doc_id") -> Column:
+def train_val_test_split() -> Column:
     """80/10/10 train/val/test assignment column: deterministic,
     engine-portable (the md5 hash_bucket variate over 1000 buckets),
     disjoint and exhaustive by construction — the cumulative thresholds
     800 and 900 carve [0, 1000) into one interval per split. A pure
-    map-side expression over the id column alone (no DataFrame parameter —
+    map-side expression over ``doc_id`` alone (no DataFrame parameter —
     nothing else feeds the assignment): no shuffle, no state, stable across
     runs/partitionings/engines, so a doc can never leak between train and
     eval splits when the corpus is re-processed."""
-    b = hash_bucket(F.col(id_col), 1000)
+    b = hash_bucket(F.col("doc_id"), 1000)
     return (
         F.when(b < F.lit(800), F.lit("train"))
         .when(b < F.lit(900), F.lit("val"))

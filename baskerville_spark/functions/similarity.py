@@ -19,6 +19,10 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+TOP_K = 10  # rows ``cosine_topk`` and ``ivf_topk`` return
+LSH_DIM = 64  # embedding dimension ``hyperplane_lsh_pairs`` expects
+LSH_N_PLANES = 12  # hyperplanes (signature bits) per LSH table
+
 
 def _stack_valid(emb: pd.Series, expected_dim: int | None = None) -> tuple[np.ndarray, np.ndarray]:
     """(mask, matrix) from a Series of array cells: NULL rows are masked out
@@ -58,12 +62,36 @@ def cosine(a: Column, b: Column) -> Column:
     return _dot(a, b) / (_norm(a) * _norm(b))
 
 
-def cosine_topk(
-    df: DataFrame,
-    query_vec: list[float],
-    k: int = 10,
-) -> DataFrame:
-    """Top-k rows by cosine similarity to a constant query vector."""
+def _with_norms(df: DataFrame) -> DataFrame:
+    """(id, v, n): ``vec_id``, the embedding as doubles and its L2 norm."""
+    emb = F.transform(F.col("embedding"), lambda x: x.cast("double"))
+    return df.select(F.col("vec_id").alias("id"), emb.alias("v")).withColumn(
+        "n", _norm(F.col("v"))
+    )
+
+
+def _pair_sides(base: DataFrame) -> list[DataFrame]:
+    """``_with_norms`` rows renamed to the a and b sides of a pair join."""
+    return [
+        base.select(F.col("id").alias(f"id_{s}"), F.col("v").alias(f"v_{s}"), F.col("n").alias(f"n_{s}"))
+        for s in "ab"
+    ]
+
+
+def _cosine_at_least(pairs: DataFrame, threshold: float) -> DataFrame:
+    """(id_a, id_b, cosine_sim) of the joined sides' pairs whose cosine
+    (one array pass: the norms are precomputed) reaches ``threshold``."""
+    return pairs.select(
+        "id_a",
+        "id_b",
+        (_dot(F.col("v_a"), F.col("v_b")) / (F.col("n_a") * F.col("n_b")))
+        .cast("double")
+        .alias("cosine_sim"),
+    ).where(F.col("cosine_sim") >= threshold)
+
+
+def cosine_topk(df: DataFrame, query_vec: list[float]) -> DataFrame:
+    """Top-``TOP_K`` rows by cosine similarity to a constant query vector."""
     q = F.array(*[F.lit(float(x)) for x in query_vec])
     emb = F.transform(F.col("embedding"), lambda x: x.cast("double"))
     return (
@@ -72,21 +100,19 @@ def cosine_topk(
             cosine(emb, q).cast("double").alias("cosine_sim"),
         )
         .orderBy(F.desc("cosine_sim"), F.asc("id"))
-        .limit(k)
+        .limit(TOP_K)
     )
 
 
 def hyperplane_lsh_pairs(
     df: DataFrame,
-    dim: int = 64,
-    n_planes: int = 12,
     n_tables: int = 2,
     threshold: float = 0.85,
-    seed: int = 42,
 ) -> DataFrame:
     """Near-duplicate vector pairs: SRP buckets → candidate self-join →
-    exact cosine verify. n_tables independent plane sets trade recall for
-    join fan-out.
+    exact cosine verify. n_tables independent sets of ``LSH_N_PLANES``
+    planes (seeded, over ``LSH_DIM``-dim vectors) trade recall for join
+    fan-out.
 
     Plan shape (the banded-LSH pattern, same as MinHash): ALL tables'
     bucket ids are computed in one pass and exploded to slim
@@ -96,7 +122,8 @@ def hyperplane_lsh_pairs(
     the distinct."""
     from pyspark.sql.types import ArrayType, LongType
 
-    rng = np.random.default_rng(seed)
+    dim, n_planes = LSH_DIM, LSH_N_PLANES  # the UDF ships these values
+    rng = np.random.default_rng(42)
     # one (n_tables*n_planes, dim) matrix; same draw order as per-table calls
     planes = np.vstack([rng.standard_normal((n_planes, dim)) for _ in range(n_tables)])
     bit_weights = 1 << np.arange(n_planes, dtype=np.int64)
@@ -117,11 +144,7 @@ def hyperplane_lsh_pairs(
                 out[i] = b[j]
         return pd.Series(out)
 
-    emb = F.transform(F.col("embedding"), lambda x: x.cast("double"))
-    base = df.select(F.col("vec_id").alias("id"), emb.alias("v")).withColumn(
-        "n", _norm(F.col("v"))
-    )
-
+    base = _with_norms(df)
     buckets = base.select(
         "id", F.posexplode(srp_buckets(F.col("v"))).alias("table", "bucket")
     )
@@ -134,20 +157,8 @@ def hyperplane_lsh_pairs(
         .distinct()
     )
 
-    va = base.select(F.col("id").alias("id_a"), F.col("v").alias("v_a"), F.col("n").alias("n_a"))
-    vb = base.select(F.col("id").alias("id_b"), F.col("v").alias("v_b"), F.col("n").alias("n_b"))
-    return (
-        cand.join(va, "id_a")
-        .join(vb, "id_b")
-        .select(
-            "id_a",
-            "id_b",
-            (_dot(F.col("v_a"), F.col("v_b")) / (F.col("n_a") * F.col("n_b")))
-            .cast("double")
-            .alias("cosine_sim"),
-        )
-        .where(F.col("cosine_sim") >= threshold)
-    )
+    va, vb = _pair_sides(base)
+    return _cosine_at_least(cand.join(va, "id_a").join(vb, "id_b"), threshold)
 
 
 def ivf_training_sample(
@@ -251,11 +262,10 @@ def ivf_topk(
     df: DataFrame,
     query_vec: list[float],
     centroids: np.ndarray,
-    k: int = 10,
     nprobe: int = 4,
 ) -> DataFrame:
-    """IVF approximate top-k: probe only the ``nprobe`` clusters nearest the
-    query, brute-force cosine inside them. At scale the assignment is a
+    """IVF approximate top-``TOP_K``: probe only the ``nprobe`` clusters
+    nearest the query, brute-force cosine inside them. At scale the assignment is a
     write-once index column (partition/cluster-prune the scan); the probe
     filter is a pushed-down ``cluster IN (...)`` predicate, so the scan
     touches nprobe/n_centroids of the data instead of all of it."""
@@ -270,7 +280,7 @@ def ivf_topk(
             "id", cosine(F.col("v"), qcol).cast("double").alias("cosine_sim")
         )
         .orderBy(F.desc("cosine_sim"), F.asc("id"))
-        .limit(k)
+        .limit(TOP_K)
     )
 
 
@@ -283,24 +293,8 @@ def brute_force_pairs(
     Norms are precomputed per vector BEFORE the join, so each pair costs one
     array pass (the dot product) instead of three.
     """
-    emb = F.transform(F.col("embedding"), lambda x: x.cast("double"))
-    base = df.select(F.col("vec_id").alias("id"), emb.alias("v")).withColumn(
-        "n", _norm(F.col("v"))
-    )
-    a = base.select(F.col("id").alias("id_a"), F.col("v").alias("v_a"), F.col("n").alias("n_a"))
-    b = base.select(F.col("id").alias("id_b"), F.col("v").alias("v_b"), F.col("n").alias("n_b"))
-    return (
-        a.crossJoin(b)
-        .where(F.col("id_a") < F.col("id_b"))
-        .select(
-            "id_a",
-            "id_b",
-            (_dot(F.col("v_a"), F.col("v_b")) / (F.col("n_a") * F.col("n_b")))
-            .cast("double")
-            .alias("cosine_sim"),
-        )
-        .where(F.col("cosine_sim") >= threshold)
-    )
+    a, b = _pair_sides(_with_norms(df))
+    return _cosine_at_least(a.crossJoin(b).where(F.col("id_a") < F.col("id_b")), threshold)
 
 
 def cosine_topk_batched(
@@ -325,9 +319,7 @@ def cosine_topk_batched(
     from pyspark.sql import Window
 
     emb = F.transform(F.col("embedding"), lambda x: x.cast("double"))
-    base = df.select(F.col("vec_id").alias("id"), emb.alias("v")).withColumn(
-        "n", _norm(F.col("v"))
-    )
+    base = _with_norms(df)
     qs = queries.select(
         F.col("vec_id").alias("query_id"), emb.alias("qv")
     ).withColumn("qn", _norm(F.col("qv")))

@@ -282,11 +282,12 @@ def oov_rate(df: DataFrame, vocab: DataFrame) -> DataFrame:
     )
 
 
-def zipf_fit(
-    df: DataFrame, text_col: str = "text", top_k: int = 500
-) -> DataFrame:
+ZIPF_TOP_K = 500  # most frequent tokens ``zipf_fit`` fits
+
+
+def zipf_fit(df: DataFrame, text_col: str = "text") -> DataFrame:
     """Zipf power-law fit over the corpus token-frequency curve: OLS of
-    ln(freq) on ln(rank) over the ``top_k`` most frequent tokens
+    ln(freq) on ln(rank) over the ``ZIPF_TOP_K`` most frequent tokens
     (whitespace tokens of lower(trim(text)), the q80 vocab convention;
     ties ranked deterministically by (count DESC, token ASC)).
 
@@ -301,14 +302,14 @@ def zipf_fit(
 
     Scale: the ONLY full-data pass is explode→groupBy(token) with
     map-side partial aggregation; the rank window runs AFTER a
-    TakeOrdered-style ``orderBy().limit(top_k)``, so it orders a frame
-    bounded by ``top_k``, never the vocabulary. The OLS sums are one
-    aggregate over those ``top_k`` rows.
+    TakeOrdered-style ``orderBy().limit(ZIPF_TOP_K)``, so it orders a
+    frame bounded by ``ZIPF_TOP_K``, never the vocabulary. The OLS sums
+    are one aggregate over those rows.
     """
     toks = F.split(F.trim(F.lower(F.col(text_col))), r"\s+")
     tok = df.select(F.explode(toks).alias("token")).where(F.col("token") != "")
     counts = tok.groupBy("token").agg(F.count(F.lit(1)).alias("cnt"))
-    top = counts.orderBy(F.desc("cnt"), F.asc("token")).limit(top_k)
+    top = counts.orderBy(F.desc("cnt"), F.asc("token")).limit(ZIPF_TOP_K)
     w = Window.orderBy(F.desc("cnt"), F.asc("token"))
     ranked = top.withColumn("r", F.row_number().over(w))
     x = F.log(F.col("r").cast("double"))

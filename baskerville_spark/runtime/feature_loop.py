@@ -80,7 +80,6 @@ def refresh_feature_cache(
             specs,
             square_variance=False,
             round_dp=None,
-            broadcast_past=False,
         )
         untouched = past.join(
             fresh.select(*keys), on=keys, how="left_anti"

@@ -25,7 +25,6 @@ from urllib.parse import urlparse
 
 import pyarrow as pa
 import pyarrow.parquet as pq
-from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 
 from baskerville_spark import __version__
@@ -45,30 +44,18 @@ _ARROW_SCHEMA = pa.schema(
 )
 
 
-def _local_path(path: str) -> str | None:
+def _local_dir(path: str) -> str:
     """Filesystem path of a local manifest location (a plain path or a
-    ``file:`` URI); None for any other ``scheme://`` URI (s3a, hdfs, …)."""
+    ``file:`` URI); any other ``scheme://`` URI (s3a, hdfs, …) raises."""
     if path.startswith("file:"):
         return urlparse(path).path
-    return None if re.match(r"[A-Za-z][A-Za-z0-9+.-]*://", path) else path
-
-
-def _local_dir(path: str) -> str:
-    local = _local_path(path)
-    if local is None:
+    if re.match(r"[A-Za-z][A-Za-z0-9+.-]*://", path):
         raise ValueError(f"manifest commits write local files, not {path!r}")
-    return local
+    return path
 
 
 def read_manifest(spark: SparkSession, path: str) -> DataFrame | None:
-    local = _local_path(path)
-    if local is None:
-        try:
-            return spark.read.schema(MANIFEST_SCHEMA).parquet(path)
-        except AnalysisException as e:
-            if e.getCondition() == "PATH_NOT_FOUND":
-                return None
-            raise
+    local = _local_dir(path)
     if not os.path.isdir(local) or not any(
         f.endswith(".parquet") for f in os.listdir(local)
     ):
@@ -81,32 +68,29 @@ def done_partitions(spark: SparkSession, path: str) -> set[int]:
     parquet file per partition with pyarrow; read them back the same way —
     a Spark job (scan + collect) for O(partitions) driver-local files was
     pure scheduling overhead (~1 s per resumable run at local[32]). The
-    Spark read is the path for a remote URI (a deployment swapping the
-    commit path for an object store or an Iceberg table) and the fallback
-    for a local file pyarrow cannot read as a manifest row (foreign
-    schema, corrupt file) — never a silent empty set that forces a full
-    recompute."""
-    local = _local_path(path)
-    if local is not None:
-        if not os.path.isdir(local):
-            return set()
-        try:
-            out: set[int] = set()
-            for f in os.listdir(local):
-                if not f.endswith(".parquet") or f.startswith("._tmp"):
-                    continue
-                t = pq.read_table(
-                    os.path.join(local, f), columns=["part_id", "status"]
-                )
-                for pid, st in zip(
-                    t.column("part_id").to_pylist(),
-                    t.column("status").to_pylist(),
-                ):
-                    if st == "done":
-                        out.add(pid)
-            return out
-        except (OSError, KeyError, pa.ArrowException):
-            pass
+    Spark read is the fallback for a local file pyarrow cannot read as a
+    manifest row (foreign schema, corrupt file) — never a silent empty set
+    that forces a full recompute. A remote URI raises, as commits do."""
+    local = _local_dir(path)
+    if not os.path.isdir(local):
+        return set()
+    try:
+        out: set[int] = set()
+        for f in os.listdir(local):
+            if not f.endswith(".parquet") or f.startswith("._tmp"):
+                continue
+            t = pq.read_table(
+                os.path.join(local, f), columns=["part_id", "status"]
+            )
+            for pid, st in zip(
+                t.column("part_id").to_pylist(),
+                t.column("status").to_pylist(),
+            ):
+                if st == "done":
+                    out.add(pid)
+        return out
+    except (OSError, KeyError, pa.ArrowException):
+        pass
     m = read_manifest(spark, path)
     if m is None:
         return set()

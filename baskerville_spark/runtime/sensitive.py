@@ -91,8 +91,7 @@ def merge_sensitive(
     store: StateStore,
     spark: SparkSession,
     keys: list[str],
-    report: bool = True,
-) -> tuple[DataFrame, MergeReport | None]:
+) -> tuple[DataFrame, MergeReport]:
     """Inner-join predictions back onto their stashed sensitive rows
     (tasks.py:1405-1408). Returns (merged, report); ``report.lost > 0``
     reproduces the reference's merge-loss warning (tasks.py:1411-1420) as
@@ -101,10 +100,7 @@ def merge_sensitive(
     if stash is None:
         raise ValueError("no sensitive stash has been written")
     merged = predictions.join(stash, on=keys, how="inner")
-    rep = None
-    if report:
-        rep = MergeReport(before=predictions.count(), after=merged.count())
-    return merged, rep
+    return merged, MergeReport(before=predictions.count(), after=merged.count())
 
 
 # --------------------------------------------------------------------------

@@ -59,14 +59,12 @@ def write_kafka_shaped(
     wire.repartition(n_files).write.mode("overwrite").parquet(path)
 
 
-def read_kafka_shaped_stream(
-    spark: SparkSession, path: str, max_files_per_trigger: int = 2
-) -> DataFrame:
+def read_kafka_shaped_stream(spark: SparkSession, path: str) -> DataFrame:
     """The broker-free stand-in for ``readStream.format("kafka")``: same
-    columns, micro-batched by file count."""
+    columns, micro-batched two files at a time."""
     return (
         spark.readStream.schema(KAFKA_WIRE_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
+        .option("maxFilesPerTrigger", 2)
         .parquet(path)
     )
 

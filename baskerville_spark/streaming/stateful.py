@@ -30,19 +30,13 @@ OUTPUT_SCHEMA = T.StructType(
         T.StructField("min_value", T.DoubleType(), True),
         T.StructField("max_value", T.DoubleType(), True),
         T.StructField("mean_value", T.DoubleType(), True),
-        # always false: no state timeout is set, so no key is ever evicted
-        T.StructField("evicted", T.BooleanType(), False),
     ]
 )
 
-# applyInPandasWithState state is positional: fields ADDED to this schema go
-# at the END so a checkpoint written with the older (shorter) 5-field layout
-# (n_total, n_batches, min, max, sum) still reads its prefix correctly, and
-# _update tolerates n_values being absent on first read after an upgrade.
-# History, for checkpoint operators: one interim revision inserted n_values
-# at position 1 (between n_total and n_batches) — checkpoints written by
-# THAT layout are positionally incompatible with this one and must be
-# discarded; pre-n_values and current checkpoints interoperate.
+# applyInPandasWithState state is positional. History, for checkpoint
+# operators: checkpoints written by an older layout — the 5-field one
+# without n_values, or the interim one with n_values at position 1 — are
+# incompatible with this one and must be discarded.
 STATE_SCHEMA = T.StructType(
     [
         T.StructField("n_total", T.LongType(), False),
@@ -58,11 +52,7 @@ def _update(
     key: Tuple[str], pdfs: Iterator[pd.DataFrame], state: GroupState
 ) -> Iterable[pd.DataFrame]:
     if state.exists:
-        got = state.get
-        n, b, mn, mx, sm = got[:5]
-        # tolerate a pre-n_values checkpoint (shorter layout): treat
-        # every prior row as a counted value, the old behavior
-        nv = got[5] if len(got) > 5 and got[5] is not None else n
+        n, b, mn, mx, sm, nv = state.get
     else:
         n, b, mn, mx, sm, nv = 0, 0, None, None, 0.0, 0
     # ONE batch per invocation: Spark calls this function once per key
@@ -94,7 +84,6 @@ def _update(
                 # rows (the reference's request count), but a null value
                 # must not drag the mean toward zero
                 "mean_value": (sm / nv) if nv else None,
-                "evicted": False,
             }
         ]
     )
@@ -103,11 +92,10 @@ def _update(
 def incremental_group_stats(
     stream: DataFrame,
     key_col: str = "key",
-    value_col: str = "value",
 ) -> DataFrame:
     """Stateful per-key incremental stats over a stream.
 
-    Input stream needs columns (key_col, value_col); output one row per key
+    Input stream needs columns (key_col, ``value``); output one row per key
     per batch with merged lifetime stats — the RequestSet incremental-update
     semantics (subset_count ≙ n_batches, base_spark.py:849-852). State has
     no timeout: a key's stats live as long as the query.
@@ -116,7 +104,7 @@ def incremental_group_stats(
 
     src = stream.select(
         F.col(key_col).cast("string").alias("key"),
-        F.col(value_col).cast("double").alias("value"),
+        F.col("value").cast("double").alias("value"),
     )
     return src.groupBy("key").applyInPandasWithState(
         _update, OUTPUT_SCHEMA, STATE_SCHEMA, "update", GroupStateTimeout.NoTimeout

@@ -176,7 +176,7 @@ def test_audio_downmix(spark):
         Row(part_id=0, clip_id="bad", bytes=b"z", codec="flac"),
     ]
     out = {r["clip_id"]: r for r in
-           audio_downmix(spark.createDataFrame(rows), n_channels=2).collect()}
+           audio_downmix(spark.createDataFrame(rows)).collect()}
     assert "bad" not in out
     for cid in ("s", "odd"):
         dec = audio.decode(bytes(out[cid]["bytes"]), "pcm_s16le")
@@ -196,7 +196,7 @@ def test_audio_trim_silence(spark):
         Row(part_id=0, clip_id="allsilent",
             bytes=np.zeros(50, dtype=np.int16).tobytes(), codec="pcm_s16le"),
     ]
-    out = audio_trim_silence(spark.createDataFrame(rows), threshold=100).collect()
+    out = audio_trim_silence(spark.createDataFrame(rows)).collect()
     assert [r["clip_id"] for r in out] == ["t"]       # all-silent dropped
     dec = audio.decode(bytes(out[0]["bytes"]), "pcm_s16le")
     assert np.array_equal(dec, np.array([5000, 0, -5000], dtype=np.int16))
@@ -238,7 +238,7 @@ def test_audio_normalize(spark):
         Row(part_id=0, clip_id="bad", bytes=b"x", codec="flac"),
     ]
     out = {r["clip_id"]: r for r in
-           audio_normalize(spark.createDataFrame(rows), target_peak=20000).collect()}
+           audio_normalize(spark.createDataFrame(rows)).collect()}
     assert set(out) == {"down", "up"}
     down = audio.decode(bytes(out["down"]["bytes"]), "pcm_s16le")
     assert np.array_equal(down, np.array([20000, -10000, 0], dtype=np.int16))
@@ -346,7 +346,7 @@ def test_audio_pitch_period(spark):
                         codec="pcm_s16le"))
     rows.append(Row(part_id=0, clip_id="bad", bytes=b"x", codec="flac"))
     out = {r["clip_id"]: r for r in
-           audio_pitch_period(spark.createDataFrame(rows), max_lag=64).collect()}
+           audio_pitch_period(spark.createDataFrame(rows)).collect()}
     for p in (4, 10, 42):
         assert out[f"p{p}"]["decode_ok"] and out[f"p{p}"]["period_samples"] == p
     assert out["bad"]["decode_ok"] is False and out["bad"]["period_samples"] is None
@@ -370,9 +370,7 @@ def test_audio_split_on_silence(spark):
         Row(part_id=0, clip_id="silent",
             bytes=np.zeros(200, dtype=np.int16).tobytes(), codec="pcm_s16le"),
     ]
-    segs = audio_split_on_silence(
-        spark.createDataFrame(rows), threshold=100, min_gap=64
-    ).collect()
+    segs = audio_split_on_silence(spark.createDataFrame(rows)).collect()
     by_clip = {}
     for r in segs:
         by_clip.setdefault(r["clip_id"], []).append((r["seg_idx"], r["n_samples"]))
@@ -456,7 +454,7 @@ def test_audio_align_offsets(spark):
     )
     got = {
         r["twin_id"]: r
-        for r in audio_align_offsets(clips, cands, frame=64).collect()
+        for r in audio_align_offsets(clips, cands).collect()
     }
     assert set(got) == {"t_128", "t_37", "t_scaled"}
     assert got["t_128"]["offset_samples"] == 128
@@ -555,7 +553,7 @@ def test_audio_vad_stats(spark):
         clip("quiet", sil(200)),
     ])
     got = {r["clip_id"]: r
-           for r in audio_vad_stats(clips, threshold=100, min_gap=64).collect()}
+           for r in audio_vad_stats(clips).collect()}
     assert (got["split"]["n_utterances"], got["split"]["speech_samples"],
             got["split"]["longest_gap"]) == (2, 150, 80)
     assert (got["kept"]["n_utterances"], got["kept"]["speech_samples"],
@@ -564,14 +562,14 @@ def test_audio_vad_stats(spark):
             got["quiet"]["speech_frac"]) == (0, 0, 0.0)
 
     # utterance count agrees with the splitter's row fan-out per clip
-    segs = audio_split_on_silence(clips, threshold=100, min_gap=64)
+    segs = audio_split_on_silence(clips)
     seg_counts = {r["clip_id"]: r["n"] for r in
                   segs.groupBy("clip_id").agg(F.count("*").alias("n")).collect()}
     assert seg_counts.get("split") == 2 and seg_counts.get("kept") == 1
     assert "quiet" not in seg_counts  # splitter drops, summary reports
 
 
-def test_audio_dc_offset(spark):
+def test_audio_dc_offset(spark, monkeypatch):
     from baskerville_spark.functions.audio_quality import audio_dc_offset
 
     # square wave around +1000: mean exactly 1000, suspect (1000/32768 > 2%)
@@ -598,17 +596,17 @@ def test_audio_dc_offset(spark):
 
     # the policy threshold is a Column, not baked into the Arrow pass:
     # tightening it flips the verdict without touching the decode path
+    from baskerville_spark.functions import audio_quality as AQ
+
+    monkeypatch.setattr(AQ, "DC_SUSPECT_FRAC", 0.005)
     tight = {r["clip_id"]: r for r in
-             audio_dc_offset(spark.createDataFrame(rows),
-                             suspect_frac=0.005).collect()}
+             audio_dc_offset(spark.createDataFrame(rows)).collect()}
     assert tight["small"]["dc_suspect"]
 
     # missing required column fails loudly at call time, for EVERY decode
     # op — the per-clip passes and the rewrite / fan-out ones alike
     # (shared audio.require_cols contract), never as a worker KeyError
     import pytest
-
-    from baskerville_spark.functions import audio_quality as AQ
 
     pcm = audio.encode(np.full(64, 1000, dtype=np.int16), "pcm_s16le")
     no_codec = spark.createDataFrame(

@@ -6,8 +6,8 @@ a bad magic, an unknown codec, 1- and 2-sample clips, an all-zero clip and
 a +/- square-wave stereo clip, plus the same table without ``part_id``.
 Every operator's rows and output schema (nullability included) are pinned
 to ``tests/data/audio_edge_golden.json``: the NULL-dBFS-on-silence rule,
-the pitch (``len <= min_lag``) and balance (``len < n_channels``)
-``decode_ok`` rules, and which rows the rewrite/fan-out ops drop.
+the pitch (``len <= 2``) and balance (``len < 2``) ``decode_ok`` rules,
+and which rows the rewrite/fan-out ops drop.
 
 Payload bytes are pinned by their decoded PCM (length + md5 under the
 row's codec), floats to 1e-9 relative. ``PYTHONPATH=. python
@@ -22,6 +22,7 @@ import json
 import math
 import os
 from decimal import Decimal
+from unittest import mock
 
 import numpy as np
 import pytest
@@ -101,12 +102,16 @@ def edge_outputs(spark) -> dict:
         [("tone", "hello"), ("gappy", "gap!"), ("zeros", "z"), ("one", "one")],
         "clip_id string, transcript_ref string",
     )
+    def bandwidth(d):  # a 64-point FFT reaches the top bins of the short clips
+        with mock.patch.object(AQ, "BANDWIDTH_N_FFT", 64):
+            return AQ.audio_bandwidth(d)
+
     per_clip = {
         "loudness": AQ.audio_loudness_stats,
         "spectral": lambda d: AQ.audio_spectral_features(d, n_fft=64),
         "dc_offset": AQ.audio_dc_offset,
         "pitch_period": AQ.audio_pitch_period,
-        "bandwidth": lambda d: AQ.audio_bandwidth(d, n_fft=64),
+        "bandwidth": bandwidth,
         "vad_stats": AQ.audio_vad_stats,
         "channel_balance": AQ.audio_channel_balance,
         "fingerprints": AD.audio_content_fingerprints,

@@ -11,6 +11,7 @@ from baskerville_spark.checks.consistency import (
     speaking_rate_verdicts,
 )
 from baskerville_spark.functions.dedup import decontaminate
+from baskerville_spark.functions import packing
 from baskerville_spark.functions.packing import pack_sequences, packed_bin_summary
 
 
@@ -119,28 +120,29 @@ def test_decontaminate(spark):
         ]
     )
     out = {r["doc_id"]: r["n_contaminated_shingles"]
-           for r in decontaminate(train, bench, n=8).collect()}
+           for r in decontaminate(train, bench).collect()}
     assert set(out) == {10}
     # the common 9-token run "the quick ... lazy dog" yields 2 distinct
     # 8-gram windows shared with the benchmark
     assert out[10] == 2
 
 
-def test_pack_sequences_matches_serial_cumsum(spark):
+def test_pack_sequences_matches_serial_cumsum(spark, monkeypatch):
+    monkeypatch.setattr(packing, "BIN_TOKENS", 10)
     rows = [Row(doc_id=i, text=" ".join(["w"] * (3 + i % 7))) for i in range(40)]
     df = spark.createDataFrame(rows)
     # multi-block path: the session's 4 range blocks exercise the offset map
     assert spark.sparkContext.defaultParallelism > 1
     packed = {
         r["doc_id"]: (r["start_offset"], r["bin_id"])
-        for r in pack_sequences(df, bin_tokens=10).collect()
+        for r in pack_sequences(df).collect()
     }
     acc = 0
     for i in range(40):
         n = 3 + i % 7
         assert packed[i] == (acc, acc // 10), f"doc {i}"
         acc += n
-    summary = packed_bin_summary(pack_sequences(df, bin_tokens=10)).collect()
+    summary = packed_bin_summary(pack_sequences(df)).collect()
     assert sum(r["n_docs"] for r in summary) == 40
     assert sum(r["n_tokens"] for r in summary) == acc
 
@@ -151,9 +153,7 @@ def test_mixture_sample(spark):
 
     rows = [Row(doc_id=i, source=f"s{i % 4}") for i in range(400)]  # 100 per group
     df = spark.createDataFrame(rows)
-    out = mixture_sample(
-        df, {"s0": 0.5, "s1": 0.25, "s2": 0.25}, group_col="source"
-    )
+    out = mixture_sample(df, {"s0": 0.5, "s1": 0.25, "s2": 0.25})
     got = {r["source"]: r["n"] for r in
            out.groupBy("source").agg(F.count(F.lit(1)).alias("n")).collect()}
     # T = min(100/.5, 100/.25, 100/.25) = 200 -> targets 100/50/50;
@@ -166,21 +166,21 @@ def test_mixture_sample(spark):
     ids = sorted(r["doc_id"] for r in out.collect())
     ids2 = sorted(
         r["doc_id"]
-        for r in mixture_sample(
-            df, {"s0": 0.5, "s1": 0.25, "s2": 0.25}, group_col="source"
-        ).collect()
+        for r in mixture_sample(df, {"s0": 0.5, "s1": 0.25, "s2": 0.25}).collect()
     )
     assert ids == ids2
 
 
-def test_chunk_documents(spark):
+def test_chunk_documents(spark, monkeypatch):
     from baskerville_spark.functions.packing import chunk_documents
 
+    monkeypatch.setattr(packing, "CHUNK_TOKENS", 10)
+    monkeypatch.setattr(packing, "CHUNK_STRIDE", 8)
     df = spark.createDataFrame(
         [Row(doc_id=1, text=" ".join(f"t{i}" for i in range(25))),
          Row(doc_id=2, text="a b")]
     )
-    out = chunk_documents(df, chunk_tokens=10, stride=8)
+    out = chunk_documents(df)
     rows = {(r["doc_id"], r["chunk_idx"]): r for r in out.collect()}
     # doc 1: 25 tokens -> starts 0,8,16,24
     assert sorted(k[1] for k in rows if k[0] == 1) == [0, 1, 2, 3]
@@ -212,9 +212,11 @@ def test_vocab_oov(spark):
     assert abs(out[2]["oov_ratio"] - 0.5) < 1e-9
 
 
-def test_robust_outlier_violations(spark):
+def test_robust_outlier_violations(spark, monkeypatch):
+    from baskerville_spark.checks import stats
     from baskerville_spark.checks.stats import robust_outlier_violations
 
+    monkeypatch.setattr(stats, "OUTLIER_K", 3.0)
     # group g: values 1..9 plus a 100 outlier -> med 5.5, MAD 2.5
     # threshold = 3 * 1.4826 * 2.5 = 11.12 -> only 100 flagged
     rows = [Row(part="g", rid=i, x=float(i)) for i in range(1, 10)]
@@ -222,7 +224,7 @@ def test_robust_outlier_violations(spark):
     rows.append(Row(part="h", rid=1, x=None))  # null-only group: no output
     df = spark.createDataFrame(rows)
     out = robust_outlier_violations(
-        df, "x", part_col="part", id_cols=["rid"], k=3.0
+        df, "x", part_col="part", id_cols=["rid"]
     ).collect()
     assert [(r["part"], r["rid"], r["x"]) for r in out] == [("g", 99, 100.0)]
     assert abs(out[0]["med"] - 5.5) < 1e-9 and abs(out[0]["mad"] - 2.5) < 1e-9
@@ -240,7 +242,7 @@ def test_pack_sequences_plan_no_global_window(spark):
     from baskerville_spark.functions.packing import pack_sequences
 
     rows = [Row(doc_id=i, text="a b c") for i in range(100)]
-    packed = pack_sequences(spark.createDataFrame(rows), bin_tokens=10)
+    packed = pack_sequences(spark.createDataFrame(rows))
     plan = packed._jdf.queryExecution().executedPlan().toString()
     assert "Window" in plan
     assert "SinglePartition" not in plan

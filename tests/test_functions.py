@@ -12,6 +12,7 @@ from baskerville_spark.functions.dedup import (
     ngram_jaccard_pairs,
     simhash,
 )
+from baskerville_spark.functions import similarity
 from baskerville_spark.functions.similarity import (
     brute_force_pairs,
     cosine_topk,
@@ -91,43 +92,46 @@ def _vec_df(spark, n=60, dim=16, seed=7):
     return spark.createDataFrame(rows, "vec_id int, embedding array<float>")
 
 
-def test_cosine_topk_self_first(spark):
+def test_cosine_topk_self_first(spark, monkeypatch):
+    monkeypatch.setattr(similarity, "TOP_K", 3)
     df = _vec_df(spark)
     q = [float(x) for x in df.where("vec_id = 0").first()["embedding"]]
-    top = cosine_topk(df, q, k=3).collect()
+    top = cosine_topk(df, q).collect()
     assert top[0]["id"] == 0 and abs(top[0]["cosine_sim"] - 1.0) < 1e-6
     assert top[1]["id"] == 1  # injected near-duplicate
 
 
-def test_lsh_recall_vs_brute_force(spark):
+def test_lsh_recall_vs_brute_force(spark, monkeypatch):
+    monkeypatch.setattr(similarity, "LSH_DIM", 16)
+    monkeypatch.setattr(similarity, "LSH_N_PLANES", 8)
     df = _vec_df(spark)
     exact = {(r["id_a"], r["id_b"]) for r in brute_force_pairs(df, threshold=0.95).collect()}
     assert len(exact) >= 8  # the injected near-dup pairs
     approx = {
         (r["id_a"], r["id_b"])
-        for r in hyperplane_lsh_pairs(
-            df, dim=16, n_planes=8, n_tables=4, threshold=0.95
-        ).collect()
+        for r in hyperplane_lsh_pairs(df, n_tables=4, threshold=0.95).collect()
     }
     assert approx.issubset(exact | approx)  # verify step keeps only >= threshold
     recall = len(approx & exact) / len(exact)
     assert recall >= 0.75, (recall, exact - approx)
 
 
-def test_ivf_topk_matches_brute_force(spark):
+def test_ivf_topk_matches_brute_force(spark, monkeypatch):
     from baskerville_spark.functions.similarity import ivf_topk, train_ivf_centroids
 
     df = _vec_df(spark, n=120, dim=16)
     cent = train_ivf_centroids(df, n_centroids=8, sample_mod=2)
     assert cent.shape == (8, 16)
     q = [float(x) for x in df.where("vec_id = 0").first()["embedding"]]
-    exact = [r["id"] for r in cosine_topk(df, q, k=5).collect()]
+    monkeypatch.setattr(similarity, "TOP_K", 5)
+    exact = [r["id"] for r in cosine_topk(df, q).collect()]
     approx = [
-        r["id"] for r in ivf_topk(df, q, cent, k=5, nprobe=8).collect()
+        r["id"] for r in ivf_topk(df, q, cent, nprobe=8).collect()
     ]  # nprobe == n_centroids → exhaustive → must equal exact
     assert approx == exact
     # probing fewer clusters still finds the query vector itself + its twin
-    few = [r["id"] for r in ivf_topk(df, q, cent, k=2, nprobe=2).collect()]
+    monkeypatch.setattr(similarity, "TOP_K", 2)
+    few = [r["id"] for r in ivf_topk(df, q, cent, nprobe=2).collect()]
     assert few[0] == 0 and few[1] == 1
 
 
@@ -318,7 +322,7 @@ def test_geo_tz_offset_edge_inputs(spark):
     assert out[5] == -12
 
 
-def test_similarity_null_and_ragged_guards(spark):
+def test_similarity_null_and_ragged_guards(spark, monkeypatch):
     """NULL embeddings null-propagate through SRP/IVF-assign instead of
     crashing the Python worker; ragged dims raise a descriptive error."""
     from baskerville_spark.functions.similarity import (
@@ -327,7 +331,9 @@ def test_similarity_null_and_ragged_guards(spark):
 
     rows = [(0, [1.0, 0.0, 0.0, 0.0]), (1, [1.0, 0.01, 0.0, 0.0]), (2, None)]
     df = spark.createDataFrame(rows, "vec_id int, embedding array<float>")
-    pairs = hyperplane_lsh_pairs(df, dim=4, n_planes=4, n_tables=2, threshold=0.9)
+    monkeypatch.setattr(similarity, "LSH_DIM", 4)
+    monkeypatch.setattr(similarity, "LSH_N_PLANES", 4)
+    pairs = hyperplane_lsh_pairs(df, n_tables=2, threshold=0.9)
     got = {(r["id_a"], r["id_b"]) for r in pairs.collect()}
     assert got == {(0, 1)}  # null row contributed no buckets, no crash
 
@@ -369,8 +375,8 @@ def test_ivf_probe_prunes_clusters(spark):
     # even combs and leave half the clusters unseeded
     cent = train_ivf_centroids(df, n_centroids=8, sample_mod=3)
     q = [float(x) for x in rows[0][1]]
-    exact = [r["id"] for r in cosine_topk(df, q, k=10).collect()]
-    appr = [r["id"] for r in ivf_topk(df, q, cent, k=10, nprobe=2).collect()]
+    exact = [r["id"] for r in cosine_topk(df, q).collect()]
+    appr = [r["id"] for r in ivf_topk(df, q, cent, nprobe=2).collect()]
     assert appr == exact  # recall 1.0 at low nprobe
 
     # selectivity: the probed clusters hold <= 30% of the corpus
@@ -514,7 +520,7 @@ def test_containment_catches_excerpts_jaccard_misses(spark):
     )
     cont = {
         (r["id_a"], r["id_b"]): (r["containment_a"], r["containment_b"])
-        for r in shingle_containment_pairs(docs, n=3, threshold=0.8).collect()
+        for r in shingle_containment_pairs(docs).collect()
     }
     # excerpt fully contained: 4 of doc 2's 4 shingles appear in doc 1
     assert set(cont) == {(1, 2)}
@@ -600,7 +606,7 @@ def test_bloom_semi_join_equals_exact(spark):
     )
     dim = spark.range(120).select((F.col("id") * 3).alias("dk"))  # 0,3,..357
     got = bloom_semi_join(
-        fact, dim, fact_key="k", dim_key="dk", m_bits=1 << 14, n_hashes=5
+        fact, dim, fact_key="k", dim_key="dk", m_bits=1 << 14
     )
     expect = fact.join(
         dim.select(F.col("dk").alias("k")), "k", "left_semi"
@@ -685,7 +691,7 @@ def test_train_val_test_split_disjoint_exhaustive(spark):
     from baskerville_spark.functions.sampling import train_val_test_split
 
     df = spark.range(5000).select(F.col("id").alias("doc_id"))
-    out = df.select("doc_id", train_val_test_split("doc_id"))
+    out = df.select("doc_id", train_val_test_split())
     counts = {r["split"]: r["cnt"] for r in
               out.groupBy("split").agg(F.count(F.lit(1)).alias("cnt")).collect()}
     assert set(counts) == {"train", "val", "test"}      # exhaustive
@@ -693,7 +699,7 @@ def test_train_val_test_split_disjoint_exhaustive(spark):
     assert 0.75 < counts["train"] / 5000 < 0.85          # ~80/10/10
     assert 0.07 < counts["val"] / 5000 < 0.13
     # stability: same assignment regardless of partitioning
-    re = df.repartition(7).select("doc_id", train_val_test_split("doc_id"))
+    re = df.repartition(7).select("doc_id", train_val_test_split())
     assert out.exceptAll(re).count() == 0 and re.exceptAll(out).count() == 0
 
 
@@ -706,7 +712,7 @@ def test_split_edge_contracts(spark):
 
     df = spark.range(5000).select(F.col("id").alias("doc_id"))
     rows = df.select(
-        hash_bucket(F.col("doc_id"), 1000).alias("b"), train_val_test_split("doc_id")
+        hash_bucket(F.col("doc_id"), 1000).alias("b"), train_val_test_split()
     ).collect()
     for r in rows:
         want = "train" if r["b"] < 800 else "val" if r["b"] < 900 else "test"
@@ -889,7 +895,7 @@ def test_gap_fill_rejects_reserved_names(spark):
 
 def test_bpe_merges(spark):
     """BPE trainer: leftmost-non-overlapping fold (the 'aaa' classic),
-    min_freq stop, lexicographic tie-break, unicode symbols."""
+    count-2 floor stop, lexicographic tie-break, unicode symbols."""
     from baskerville_spark.functions.bpe import train_bpe_merges
 
     docs = spark.createDataFrame(
@@ -898,10 +904,10 @@ def test_bpe_merges(spark):
     )
     got = [
         (r["merge_rank"], r["lsym"], r["rsym"], r["pair_count"])
-        for r in train_bpe_merges(docs, n_merges=8, min_freq=2).collect()
+        for r in train_bpe_merges(docs, n_merges=8).collect()
     ]
     # 'aaa'×5: (a,a) appears twice per word → 10; after merging, [aa, a]
-    # yields (aa, a) at 5; (x,y) at 3; (z,z) at 1 is under min_freq → stop
+    # yields (aa, a) at 5; (x,y) at 3; (z,z) at 1 is under the count-2 floor → stop
     assert got == [(1, "a", "a", 10), (2, "aa", "a", 5), (3, "x", "y", 3)]
 
     # ties break lexicographically: (p,q) and (r,s) both at 2 → (p,q) first
@@ -910,7 +916,7 @@ def test_bpe_merges(spark):
     )
     got2 = [
         (r["lsym"], r["rsym"])
-        for r in train_bpe_merges(tied, n_merges=2, min_freq=2).collect()
+        for r in train_bpe_merges(tied, n_merges=2).collect()
     ]
     assert got2 == [("p", "q"), ("r", "s")]
 
@@ -918,7 +924,7 @@ def test_bpe_merges(spark):
     uni = spark.createDataFrame([(1, "héé héé héé")], "id int, text string")
     got3 = [
         (r["lsym"], r["rsym"])
-        for r in train_bpe_merges(uni, n_merges=2, min_freq=2).collect()
+        for r in train_bpe_merges(uni, n_merges=2).collect()
     ]
     assert got3 == [("h", "é"), ("hé", "é")]
 
@@ -933,7 +939,7 @@ def test_apply_bpe(spark):
     corpus = spark.createDataFrame(
         [(1, "aaa aaa aaa aaa aaa"), (2, "xy xy xy")], "id int, text string"
     )
-    merges = train_bpe_merges(corpus, n_merges=4, min_freq=2)
+    merges = train_bpe_merges(corpus, n_merges=4)
     docs = spark.createDataFrame(
         [
             Row(id=1, text="aaa xy aaa"),
@@ -966,9 +972,9 @@ def test_dedup_lines(spark):
             Row(doc_id=3, text="boiler"),                      # fully owned away
         ]
     )
-    got = {r["doc_id"]: r for r in dedup_lines(docs, min_line_chars=1).collect()}
+    got = {r["doc_id"]: r for r in dedup_lines(docs).collect()}
     # doc 1 owns 'boiler' (first occurrence) and the empty line is exempt
-    # (< min_line_chars); its second 'boiler' occurrence is removed
+    # (empty); its second 'boiler' occurrence is removed
     assert got[1]["text_out"] == "boiler\nkeep one\n"
     assert got[1]["n_lines_removed"] == 1
     assert got[2]["text_out"] == "keep two\n"
@@ -976,7 +982,8 @@ def test_dedup_lines(spark):
     assert 3 not in got  # every line owned elsewhere → dropped like C4
 
 
-def test_zipf_fit(spark):
+def test_zipf_fit(spark, monkeypatch):
+    from baskerville_spark.functions import text
     from baskerville_spark.functions.text import zipf_fit
 
     # two-point OLS is an exact fit: counts (4, 2) at ranks (1, 2) give
@@ -1000,8 +1007,9 @@ def test_zipf_fit(spark):
     assert abs(out["slope"] - slope) < 1e-9
     assert abs(out["intercept"] - intercept) < 1e-9
 
-    # top_k truncates the fit frame; single-point fit is undefined -> NULL
-    top2 = zipf_fit(docs, "text", top_k=2).collect()[0]
+    # ZIPF_TOP_K truncates the fit frame; single-point fit is undefined -> NULL
+    monkeypatch.setattr(text, "ZIPF_TOP_K", 2)
+    top2 = zipf_fit(docs, "text").collect()[0]
     assert top2["n_ranked"] == 2
     one = spark.createDataFrame([("solo solo",)], "text string")
     r1 = zipf_fit(one, "text").collect()[0]

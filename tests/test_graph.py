@@ -159,7 +159,7 @@ def test_dedup_clusters_vertices_widen_to_singletons(spark):
     )
     verts = spark.createDataFrame([(1,), (2,), (3,)], ["doc"])
     out = dedup_clusters(
-        membership, id_col="doc", bucket_col="bucket", vertices=verts
+        membership, id_col="doc", vertices=verts
     )
     rows = {r["id"]: r for r in out.collect()}
     assert rows[3]["cluster_id"] == 3 and rows[3]["cluster_size"] == 1

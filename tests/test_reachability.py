@@ -18,13 +18,17 @@ reaches all of them, and reaching a class reaches all of its methods.
 The parameter walk matches calls by callee name only: a defaulted parameter
 of a public function, public method or ``__init__`` (called by its class's
 name) counts as set when some call to that name in the package or a root
-file passes it by keyword or by position, or passes ``*args``/``**kwargs``.
+file passes it, by keyword or by position, a value other than its default:
+a literal that differs in value or type (``ast.literal_eval``; ``3`` is not
+``3.0``, ``1`` is not ``True``), any non-literal expression,
+or ``*args``/``**kwargs``. A call passing the default itself sets nothing.
 A parameter only tests set is a constant (or a module constant the test
 monkeypatches) unless ``ALLOWED_PARAMS`` names it with its reason.
 """
 
 import ast
 from pathlib import Path
+from types import SimpleNamespace
 
 ROOT = Path(__file__).resolve().parents[1]
 PKG = "baskerville_spark"
@@ -205,10 +209,10 @@ def test_every_package_definition_has_a_production_caller():
 
 
 def _defaulted_params(tree):
-    """(qualname, callee name, parameter, position or None) of each
-    defaulted parameter of the module's public functions, public methods
-    and ``__init__``s; the position skips ``self``, and keyword-only
-    parameters have none."""
+    """(qualname, callee name, parameter, position or None, default node)
+    of each defaulted parameter of the module's public functions, public
+    methods and ``__init__``s; the position skips ``self``, and
+    keyword-only parameters have none."""
     fns = []
     for node in tree.body:
         if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
@@ -228,16 +232,27 @@ def _defaulted_params(tree):
     for qual, call, fn, skip in fns:
         a = fn.args
         pos = a.posonlyargs + a.args
-        for i in range(len(pos) - len(a.defaults), len(pos)):
-            yield qual, call, pos[i].arg, i - skip
+        first = len(pos) - len(a.defaults)
+        for i in range(first, len(pos)):
+            yield qual, call, pos[i].arg, i - skip, a.defaults[i - first]
         for arg, default in zip(a.kwonlyargs, a.kw_defaults):
             if default is not None:
-                yield qual, call, arg.arg, None
+                yield qual, call, arg.arg, None, default
+
+
+_NOT_LITERAL = object()
+
+
+def _literal(node):
+    try:
+        return ast.literal_eval(node)
+    except ValueError:
+        return _NOT_LITERAL
 
 
 def _calls(trees):
-    """Callee name -> (keywords passed, most positional arguments, whether
-    some call passes ``*args`` or ``**kwargs``)."""
+    """Callee name -> [(positional argument nodes, {keyword: node}, whether
+    the call passes ``*args`` or ``**kwargs``)], one entry per call."""
     seen = {}
     for tree in trees:
         for node in ast.walk(tree):
@@ -247,29 +262,43 @@ def _calls(trees):
             name = f.id if isinstance(f, ast.Name) else getattr(f, "attr", None)
             if name is None:
                 continue
-            kw, n_pos, star = seen.get(name, (set(), 0, False))
-            kw = kw | {k.arg for k in node.keywords if k.arg}
-            n_pos = max(n_pos, sum(not isinstance(x, ast.Starred) for x in node.args))
-            star = star or any(isinstance(x, ast.Starred) for x in node.args) or any(
+            star = any(isinstance(x, ast.Starred) for x in node.args) or any(
                 k.arg is None for k in node.keywords
             )
-            seen[name] = (kw, n_pos, star)
+            pos = [x for x in node.args if not isinstance(x, ast.Starred)]
+            seen.setdefault(name, []).append((pos, {k.arg: k.value for k in node.keywords if k.arg}, star))
     return seen
 
 
-def unset_parameters():
+def _sets(call, param, pos, default):
+    """Whether one call passes ``param`` a value other than its default: a
+    literal of another value or type, any other expression, or
+    ``*args``/``**kwargs``."""
+    args, kw, star = call
+    if star:
+        return True
+    arg = kw.get(param)
+    if arg is None and pos is not None and pos < len(args):
+        arg = args[pos]
+    if arg is None:
+        return False
+    value, dflt = _literal(arg), _literal(default)
+    return value is _NOT_LITERAL or dflt is _NOT_LITERAL or type(value) is not type(dflt) or value != dflt
+
+
+def unset_parameters(modules=None):
     """Sorted ``(module, qualname, parameter)`` of every defaulted public
-    parameter in the package that no production call sets."""
-    modules = _load()
+    parameter in the package that no production call sets to a value other
+    than its default."""
+    modules = _load() if modules is None else modules
     trees = [m.tree for m in modules.values()]  # the package and the root files
     calls = _calls(trees)
     out = []
     for name, m in modules.items():
         if name.split(".")[0] != PKG:
             continue
-        for qual, call, param, pos in _defaulted_params(m.tree):
-            kw, n_pos, star = calls.get(call, (set(), 0, False))
-            if star or param in kw or (pos is not None and pos < n_pos):
+        for qual, call, param, pos, default in _defaulted_params(m.tree):
+            if any(_sets(c, param, pos, default) for c in calls.get(call, ())):
                 continue
             if (name, qual, param) not in ALLOWED_PARAMS:
                 out.append((name, qual, param))
@@ -279,9 +308,30 @@ def unset_parameters():
 def test_every_defaulted_parameter_is_set_by_a_production_call():
     missing = unset_parameters()
     assert not missing, (
-        "defaulted parameters no production call sets (make them constants):\n"
+        "defaulted parameters no production call sets to another value (make them constants):\n"
         + "\n".join(f"  {m}.{q}({p})" for m, q, p in missing)
     )
+
+
+def test_parameter_guard_compares_values():
+    """A parameter whose only calls pass its own default is unset; one
+    that gets a different literal, a name or ``**kw`` is set."""
+    src = '''
+def op(df, a=1, b="x", c=2.0, d=None, e=True):
+    return df
+
+def kw_only(df, *, f=3):
+    return df
+
+def run(df, kw, y):
+    op(df, a=1, b="x")
+    op(df, 1, "x", c=2.5)
+    op(df, d=y, e=True)
+    kw_only(df, **kw)
+'''
+    mod = f"{PKG}.synthetic"
+    got = unset_parameters({mod: SimpleNamespace(tree=ast.parse(src))})
+    assert got == [(mod, "op", "a"), (mod, "op", "b"), (mod, "op", "e")]
 
 
 def test_no_tracked_source_hardcodes_the_checkout_path():

@@ -218,23 +218,13 @@ def test_done_partitions_foreign_schema_falls_back_to_spark(spark, tmp_path):
     assert done_partitions(spark, str(man_p)) == {0, 2}
 
 
-def test_done_partitions_remote_uri_reads_with_spark(spark, monkeypatch):
-    """A non-local URI goes to the Spark read; it never short-circuits to
-    an empty set (which would force a full recompute)."""
-    from baskerville_spark.runtime import manifest as M
-    from baskerville_spark.schema import MANIFEST_SCHEMA
+def test_done_partitions_remote_uri_raises(spark):
+    """A non-local URI raises the commit path's error; it never
+    short-circuits to an empty set (which would force a full recompute)."""
+    import pytest
 
-    rows = [(4, "done", 1, 10, 0, None, None, "x"),
-            (6, "failed", 1, 10, 0, None, None, "x")]
-    seen = []
-
-    def fake_read(spark_, path):
-        seen.append(path)
-        return spark_.createDataFrame(rows, MANIFEST_SCHEMA)
-
-    monkeypatch.setattr(M, "read_manifest", fake_read)
-    assert M.done_partitions(spark, "s3a://bucket/manifest") == {4}
-    assert seen == ["s3a://bucket/manifest"]
+    with pytest.raises(ValueError, match="manifest commits write local files"):
+        done_partitions(spark, "s3a://bucket/manifest")
 
 
 def test_remote_manifest_fails_before_any_work(spark, tmp_path, monkeypatch):

@@ -191,7 +191,7 @@ def test_kafka_shaped_stream_microbatches(spark, tmp_path):
     assert set(wire.columns) == {f.name for f in KAFKA_WIRE_SCHEMA.fields}
     assert wire.count() == 100
 
-    stream = read_kafka_shaped_stream(spark, path, max_files_per_trigger=2)
+    stream = read_kafka_shaped_stream(spark, path)
     decoded = decode_json_values(stream, "id bigint, grp int, amount double")
     q = (
         decoded.writeStream.outputMode("append")
