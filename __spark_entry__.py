@@ -551,7 +551,7 @@ def q22_vector_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = _t(spark, sf_dir, "embeddings").repartition(
         spark.sparkContext.defaultParallelism
     )
-    p = brute_force_pairs(emb, threshold=0.45)
+    p = brute_force_pairs(emb)
     return p.select("id_a", "id_b", F.round("cosine_sim", 4).alias("cosine_sim"))
 
 
@@ -583,7 +583,7 @@ def q15_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     # max_df=20: the stop-shingle guard is ACTIVE at bench scale (sf0.1 max
     # 3-gram df is 25) and a no-op at the sf0.01 gate (max df 7) — the
     # exercised plan is the bounded one, not the quadratic one.
-    p = ngram_jaccard_pairs(d, n=3, threshold=0.8, max_df=20)
+    p = ngram_jaccard_pairs(d)
     return p.select("id_a", "id_b", F.round("jaccard", 6).alias("jaccard"))
 
 
@@ -693,7 +693,7 @@ def q19_minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     from baskerville_spark.functions.dedup import minhash_lsh_pairs
 
     d = _docs_wide(spark, sf_dir)
-    p = minhash_lsh_pairs(d, n=3, verify_threshold=0.8)
+    p = minhash_lsh_pairs(d)
     return p.select("id_a", "id_b", F.round("jaccard", 6).alias("jaccard"))
 
 
@@ -721,20 +721,19 @@ WHERE c * 1.0 / (sa.n + sb.n - c) >= 0.8
 def q20_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-document SimHash fingerprints (SURVEY §2.8 bit ops / LLM-dedup).
 
-    ORACLE-CHECKED since round 3: uses the SQL-portable md5 hasher (60-bit,
-    dedup._token_hash) so DuckDB reproduces every bit of the fingerprint —
-    token hash = ('0x' || substr(md5(tok),1,15))::BIGINT, then the same
-    60 conditional bit-sums. The xxhash64 production hasher keeps its
-    planted-pair pytest (test_functions)."""
+    ORACLE-CHECKED since round 3: simhash's only hasher is the SQL-portable
+    60-bit md5 (dedup._token_hash), so DuckDB reproduces every bit of the
+    fingerprint — token hash = ('0x' || substr(md5(tok),1,15))::BIGINT,
+    then the same 60 conditional bit-sums."""
     from baskerville_spark.functions.dedup import simhash
 
     d = _docs_wide(spark, sf_dir)
-    return simhash(d, hasher="md5").select(F.col("id").alias("doc_id"), "simhash")
+    return simhash(d).select(F.col("id").alias("doc_id"), "simhash")
 
 
 def _simhash_cte() -> str:
     """CTEs computing the 60-bit md5 SimHash per document in DuckDB —
-    bit-exact mirror of dedup.simhash(hasher='md5')."""
+    bit-exact mirror of dedup.simhash."""
     bit_sums = ",\n         ".join(
         f"SUM(CASE WHEN ((h >> {i}) & 1) = 1 THEN 1 ELSE -1 END) AS b{i}"
         for i in range(60)
@@ -1210,7 +1209,7 @@ def q32_srp_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     from baskerville_spark.functions.similarity import hyperplane_lsh_pairs
 
     aug = _augmented_embeddings(spark, sf_dir)
-    p = hyperplane_lsh_pairs(aug, n_tables=4, threshold=0.9)
+    p = hyperplane_lsh_pairs(aug)
     return p.select("id_a", "id_b", F.round("cosine_sim", 4).alias("cosine_sim"))
 
 
@@ -1334,7 +1333,7 @@ def q35_simhash_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     from baskerville_spark.functions.dedup import simhash_near_dups
 
     d = _docs_wide(spark, sf_dir)
-    return simhash_near_dups(d, hasher="md5")
+    return simhash_near_dups(d)
 
 
 def _q35_sql() -> str:
@@ -1447,9 +1446,9 @@ def q38_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the md5-threshold sampler is independent of the vec_id%8 cluster key
     # (the old id%sample_mod filter had to be coprime with it), and the
     # driver-side sample is hard-capped at 256·n_centroids vectors
-    cent = train_ivf_centroids(emb, n_centroids=8, sample_mod=3)
+    cent = train_ivf_centroids(emb)
     qvec = [float(x) for x in emb.where("vec_id = 0").select("embedding").first()[0]]
-    top = ivf_topk(emb, qvec, cent, nprobe=2)
+    top = ivf_topk(emb, qvec, cent)
     return top.select(F.col("id").alias("vec_id"), F.round("cosine_sim", 4).alias("cosine_sim"))
 
 
@@ -1567,7 +1566,7 @@ def q41_video_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     df = spark.createDataFrame(
         rows, "item_id string, payload binary, fmt string"
     ).repartition(spark.sparkContext.defaultParallelism)
-    return sample_frames(df, every_k=5).withColumn(
+    return sample_frames(df).withColumn(
         "decode_ok", F.col("decode_ok").cast("int")
     )
 
@@ -1593,9 +1592,7 @@ def q42_dup_exemplars(spark: SparkSession, sf_dir: str) -> DataFrame:
     from baskerville_spark.checks.uniqueness import duplicate_exemplars
 
     o = _t(spark, sf_dir, "orders")
-    out = duplicate_exemplars(
-        o, key="o_custkey", id_col="o_orderkey", k=5, n_salt=16
-    )
+    out = duplicate_exemplars(o, key="o_custkey", id_col="o_orderkey")
     # canonical string form: array cells hash differently across engines
     return out.select(
         "o_custkey",
@@ -1788,7 +1785,7 @@ def q45_streaming_kafka_shaped(spark: SparkSession, sf_dir: str) -> DataFrame:
         write_kafka_shaped(
             e, tmp, topic="events",
             value_struct=F.struct("event_id", "user_id", "event_type", "value"),
-            key_col=F.col("user_id"), n_files=4,
+            key_col=F.col("user_id"),
         )
         name = f"q45_out_{uuid.uuid4().hex[:8]}"
         with _stream_shuffle(spark):
@@ -2352,7 +2349,7 @@ def q55_iforest_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("f2"),
     )
     n_planted = feats.where(F.col("vec_id") % 50 == 0).count()
-    forest = train_iforest(feats, "vec_id", ["f1", "f2"], n_trees=50, seed=11)
+    forest = train_iforest(feats, "vec_id", ["f1", "f2"])
     top = top_anomalies(feats, forest, "vec_id", ["f1", "f2"], k=n_planted)
     return top.select(F.col("id").alias("vec_id"), F.lit(1).alias("flagged"))
 
@@ -2388,7 +2385,7 @@ def q56_gbm_labeler(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.element_at("embedding", 2).cast("double").alias("f2"),
         (F.col("vec_id") % 40 == 0).cast("double").alias("label"),
     )
-    model = train_gbm(feats, "vec_id", ["f1", "f2"], "label", n_rounds=30)
+    model = train_gbm(feats, "vec_id", ["f1", "f2"], "label")
     pred = predict_label(feats, model, "vec_id", ["f1", "f2"])
     return pred.where(F.col("predicted") == 1).select(
         F.col("id").alias("vec_id"), "predicted"
@@ -2575,10 +2572,8 @@ def q58_feature_update(spark: SparkSession, sf_dir: str) -> DataFrame:
     # boundaries where ulp-differing engine doubles legitimately round
     # apart (the q62 lesson), while the scaled form lands on the 2-dp
     # grid, 5e-5 from any boundary. The mean updater itself is still what
-    # computes it (raw, round_dp=None, scaled afterwards).
-    m = update_feature_vector(
-        current, past, ["user_id"], specs, round_dp=None
-    )
+    # computes it (raw, scaled afterwards).
+    m = update_feature_vector(current, past, ["user_id"], specs)
     return m.select(
         "user_id",
         *[
@@ -2801,13 +2796,13 @@ def _gate_tmp_detach(df: DataFrame, tmp: str) -> DataFrame:
     return out
 
 
-def _split_events_mod3(e: DataFrame, src: str, n: int = 3) -> None:
-    """One parquet file per micro-batch: ``event_id mod n`` splits the
-    events table into ``n`` deterministic stream files (q45's broker-free
+def _split_events_mod3(e: DataFrame, src: str) -> None:
+    """One parquet file per micro-batch: ``event_id mod 3`` splits the
+    events table into 3 deterministic stream files (q45's broker-free
     idiom; shared by the q62/q64 fixtures so they cannot diverge)."""
-    for i in range(n):
+    for i in range(3):
         (
-            e.where(F.col("event_id") % n == i)
+            e.where(F.col("event_id") % 3 == i)
             .coalesce(1)
             .write.mode("append")
             .parquet(src)
@@ -3453,7 +3448,7 @@ def q69_tfidf_cosine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("text"),
         )
     )
-    pairs = tfidf_cosine_pairs(corpus, threshold=0.0, max_df=400)
+    pairs = tfidf_cosine_pairs(corpus)
     return pairs.select(
         "id_a",
         "id_b",
@@ -3523,7 +3518,7 @@ def q70_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("text"),
         )
     )
-    p = shingle_containment_pairs(corpus, max_df=50)
+    p = shingle_containment_pairs(corpus)
     return p.select(
         "id_a",
         "id_b",
@@ -3858,7 +3853,7 @@ def q75_speaking_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     checks/consistency.py under the oracle (q74 covers the listing path)."""
     from baskerville_spark.checks.consistency import speaking_rate_verdicts
 
-    v = speaking_rate_verdicts(_meta_clips(spark), min_cps=20.0, max_cps=200.0)
+    v = speaking_rate_verdicts(_meta_clips(spark))
     return v.select(
         "part_id",
         "check_name",
@@ -4028,7 +4023,7 @@ def q80_vocab_oov(spark: SparkSession, sf_dir: str) -> DataFrame:
     from baskerville_spark.functions.text import oov_rate, vocab_top_tokens
 
     d = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    vocab = vocab_top_tokens(d, vocab_size=500)
+    vocab = vocab_top_tokens(d)
     return oov_rate(d, vocab).select(
         F.col("id").alias("doc_id"), "n_tokens", "n_oov", "oov_ratio"
     )
@@ -4207,9 +4202,12 @@ def q84_spectral_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     integer dominant_bin to its closed form and bounds the centroid
     (|centroid − k| < 1e-6 — leakage-free means numerically-zero mass
     elsewhere). Oracle rebuilds the integers arithmetically."""
-    from baskerville_spark.functions.audio_quality import audio_spectral_features
+    from baskerville_spark.functions.audio_quality import (
+        SPECTRAL_N_FFT,
+        audio_spectral_features,
+    )
 
-    n_fft = 256
+    n_fft = SPECTRAL_N_FFT  # the tones sit on the bins of this window
 
     def plant(i):
         k = (i % 40) + 1                      # target bin 1..40
@@ -4219,7 +4217,7 @@ def q84_spectral_features(spark: SparkSession, sf_dir: str) -> DataFrame:
         return [planted_clip("sine", i, pcm, bin_k=k)]
 
     clips = rows_from_range(spark, 200, plant, PLANT_SCHEMA + ", bin_k int")
-    feats = audio_spectral_features(clips, n_fft=n_fft).join(
+    feats = audio_spectral_features(clips).join(
         clips.select("clip_id", "bin_k"), "clip_id"
     )
     return feats.select(
@@ -4256,11 +4254,12 @@ def q85_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
     the oracle rebuilds arithmetically. Pipeline under test: decode →
     interp → re-encode → decode → rFFT, all Arrow passes."""
     from baskerville_spark.functions.audio_quality import (
+        SPECTRAL_N_FFT,
         audio_resample,
         audio_spectral_features,
     )
 
-    n_fft = 256
+    n_fft = SPECTRAL_N_FFT  # the tones sit on the bins of this window
 
     def plant(i):
         k = (i % 20) + 1                      # keep 2k well under Nyquist
@@ -4273,7 +4272,7 @@ def q85_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark, 150, plant, PLANT_SCHEMA + ", sr_hz int, bin_k int"
     )
     down = audio_resample(clips, target_sr=8000)
-    feats = audio_spectral_features(down, n_fft=n_fft).join(
+    feats = audio_spectral_features(down).join(
         clips.select("clip_id", "bin_k"), "clip_id"
     )
     return feats.select(
@@ -4310,7 +4309,7 @@ def q86_batched_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = _t(spark, sf_dir, "embeddings")
     queries = emb.where(F.col("vec_id") % 50 == 7)
     corpus = emb.where(F.col("vec_id") % 50 != 7)
-    out = cosine_topk_batched(corpus, queries, k=5)
+    out = cosine_topk_batched(corpus, queries)
     return out.select(
         "query_id",
         F.col("id").alias("vec_id"),
@@ -4354,11 +4353,12 @@ def q87_downmix(spark: SparkSession, sf_dir: str) -> DataFrame:
     dominant bin through the REAL decode → deinterleave → mean → encode →
     decode → rFFT pipeline."""
     from baskerville_spark.functions.audio_quality import (
+        SPECTRAL_N_FFT,
         audio_downmix,
         audio_spectral_features,
     )
 
-    n_fft = 256
+    n_fft = SPECTRAL_N_FFT  # the tones sit on the bins of this window
 
     def plant(i):
         k = (i % 30) + 1
@@ -4375,7 +4375,7 @@ def q87_downmix(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     clips = rows_from_range(spark, 150, plant, PLANT_SCHEMA + ", bin_k int")
     mono = audio_downmix(clips)
-    feats = audio_spectral_features(mono, n_fft=n_fft).join(
+    feats = audio_spectral_features(mono).join(
         clips.select("clip_id", "bin_k"), "clip_id"
     )
     return feats.select(
@@ -4595,10 +4595,7 @@ def q93_bloom_semi(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     orders = _t(spark, sf_dir, "orders")
     dim = _t(spark, sf_dir, "customer").where(F.col("c_custkey") % 7 == 0)
-    out = bloom_semi_join(
-        orders, dim, fact_key="o_custkey", dim_key="c_custkey",
-        m_bits=1 << 16,
-    )
+    out = bloom_semi_join(orders, dim, fact_key="o_custkey", dim_key="c_custkey")
     return out.select("o_orderkey", "o_custkey")
 
 
@@ -5138,7 +5135,7 @@ def q102_zorder(spark: SparkSession, sf_dir: str) -> DataFrame:
     from baskerville_spark.functions.layout import z_value
 
     c = _t(spark, sf_dir, "customer")
-    z = z_value(F.col("c_custkey") % 256, F.col("c_nationkey"), bits=8)
+    z = z_value(F.col("c_custkey") % 256, F.col("c_nationkey"))
     return c.select(
         "c_custkey",
         z.alias("z"),
@@ -5664,7 +5661,7 @@ FROM r
 def q112_gap_fill(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gap-fill gate: per-user 6-hour grid over the events table (slots =
     epoch − epoch % 21600), latest-in-slot by event_id, gaps forward-filled
-    up to max_fill=8 slots (longer gaps stay absent — bounded row
+    up to timegrid.MAX_FILL = 8 slots (longer gaps stay absent — bounded row
     amplification under the hash). value AND event_type carry; is_observed
     marks real vs filled rows."""
     from baskerville_spark.functions.timegrid import gap_fill
@@ -5687,7 +5684,6 @@ def q112_gap_fill(spark: SparkSession, sf_dir: str) -> DataFrame:
         value_cols=["value", "event_type"],
         step=step,
         order_col="event_id",
-        max_fill=8,
     )
 
 
@@ -6442,14 +6438,15 @@ def q122_audio_decode_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out
 
 
-def _q122_sql(n_rows: int = 1000, n_parts: int = 4) -> str:
+def _q122_sql() -> str:
     """Closed-form expected decode-state summary: per-part row counts from
-    the contiguous block assignment; decode failures are exactly the drift
-    partition's mp3 rows (codec unseen by every decoder). The DSP fields
-    are engine-side bounded verdicts (TRUE = merged fold equals the
-    one-pass state)."""
+    the contiguous block assignment of the gate's 1000 rows over 4 parts;
+    decode failures are exactly the drift partition's mp3 rows (codec
+    unseen by every decoder). The DSP fields are engine-side bounded
+    verdicts (TRUE = merged fold equals the one-pass state)."""
     import baskerville_spark.generator as g
 
+    n_rows, n_parts = 1000, 4
     last = n_parts - 1
     p_of = f"least({last}, (i*{n_parts})//{n_rows})"
     return f"""
@@ -6646,14 +6643,7 @@ def q125_partition_completeness(spark: SparkSession, sf_dir: str) -> DataFrame:
         & ((F.col("day") != 5) | (F.col("event_id") % 4 == 0))
         & ((F.col("day") != 7) | (F.col("ts") < cutoff))
     )
-    return completeness_verdicts(
-        current,
-        expected,
-        "day",
-        ts_col="ts",
-        count_tolerance=0.50,
-        max_staleness_s=3 * 3600,
-    )
+    return completeness_verdicts(current, expected, "day", "ts")
 
 
 _Q125_SQL = """

@@ -31,44 +31,38 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-
-def observed_profile(
-    df: DataFrame, part_col: str, ts_col: str | None = None
-) -> DataFrame:
-    """(partition, n_rows[, max_ts]) in one narrow aggregation pass."""
-    aggs = [F.count(F.lit(1)).alias("n_rows")]
-    if ts_col is not None:
-        aggs.append(F.max(ts_col).alias("max_ts"))
-    return df.groupBy(F.col(part_col).alias("partition")).agg(*aggs)
+#: fraction of its expected volume a partition may fall short by
+COUNT_TOLERANCE = 0.50
+#: seconds the observed max event time may lag the expected one
+MAX_STALENESS_S = 3 * 3600
 
 
-def expected_from_snapshot(
-    df: DataFrame, part_col: str, ts_col: str | None = None
-) -> DataFrame:
+def observed_profile(df: DataFrame, part_col: str, ts_col: str) -> DataFrame:
+    """(partition, n_rows, max_ts) in one narrow aggregation pass."""
+    return df.groupBy(F.col(part_col).alias("partition")).agg(
+        F.count(F.lit(1)).alias("n_rows"), F.max(ts_col).alias("max_ts")
+    )
+
+
+def expected_from_snapshot(df: DataFrame, part_col: str, ts_col: str) -> DataFrame:
     """Build the baseline manifest from a known-good snapshot:
-    (partition, expected_rows[, expected_max_ts])."""
-    prof = observed_profile(df, part_col, ts_col)
-    cols = [F.col("partition"), F.col("n_rows").alias("expected_rows")]
-    if ts_col is not None:
-        cols.append(F.col("max_ts").alias("expected_max_ts"))
-    return prof.select(*cols)
+    (partition, expected_rows, expected_max_ts)."""
+    return observed_profile(df, part_col, ts_col).select(
+        F.col("partition"),
+        F.col("n_rows").alias("expected_rows"),
+        F.col("max_ts").alias("expected_max_ts"),
+    )
 
 
 def completeness_verdicts(
-    current: DataFrame,
-    expected: DataFrame,
-    part_col: str,
-    ts_col: str | None = None,
-    count_tolerance: float = 0.10,
-    max_staleness_s: int | None = None,
+    current: DataFrame, expected: DataFrame, part_col: str, ts_col: str
 ) -> DataFrame:
     """One verdict row per partition seen on either side.
 
-    ``expected`` carries (partition, expected_rows[, expected_max_ts]).
-    ``count_tolerance`` is the fraction of expected volume a partition may
-    fall short by before it's a violation; ``max_staleness_s`` bounds how
-    far the observed max event time may lag the expected one (requires
-    ts_col and expected_max_ts). Both join inputs are O(partitions) —
+    ``expected`` carries (partition, expected_rows, expected_max_ts). A
+    partition may fall short of its expected volume by ``COUNT_TOLERANCE``
+    before it's a violation, and its max event time may lag the expected
+    one by ``MAX_STALENESS_S``. Both join inputs are O(partitions) —
     |partitions|-sized aggregates of a scan that projected two columns —
     so the full-outer exchange (Spark cannot broadcast a full-outer build
     side) moves manifest-sized data, never row-sized."""
@@ -79,20 +73,19 @@ def completeness_verdicts(
         how="full_outer",
     )
     n, exp = F.col("o.n_rows"), F.col("e.expected_rows")
-    floor = F.ceil(exp * F.lit(1.0 - count_tolerance)).cast("long")
+    floor = F.ceil(exp * F.lit(1.0 - COUNT_TOLERANCE)).cast("long")
+    lag = F.unix_seconds(
+        F.col("e.expected_max_ts").cast("timestamp")
+    ) - F.unix_seconds(F.col("o.max_ts").cast("timestamp"))
     status = (
         F.when(exp.isNull(), F.lit("unexpected_partition"))
         .when(n.isNull(), F.lit("missing_partition"))
         .when(n < floor, F.lit("row_count_low"))
-    )
-    if ts_col is not None and max_staleness_s is not None:
-        lag = F.unix_seconds(
-            F.col("e.expected_max_ts").cast("timestamp")
-        ) - F.unix_seconds(F.col("o.max_ts").cast("timestamp"))
-        status = status.when(
-            F.col("e.expected_max_ts").isNotNull() & (lag > F.lit(max_staleness_s)),
+        .when(
+            F.col("e.expected_max_ts").isNotNull() & (lag > F.lit(MAX_STALENESS_S)),
             F.lit("stale_partition"),
         )
+    )
     return j.select(
         F.coalesce(F.col("o.partition"), F.col("e.partition")).alias("partition"),
         F.coalesce(n, F.lit(0)).cast("long").alias("n_rows"),

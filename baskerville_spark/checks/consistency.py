@@ -13,7 +13,7 @@ cannot belong to their clip — WITHOUT decoding anything:
   reference's declared-schema sanity layer (log_parsers.py:173-250), lifted
   from "column exists/type" to a cross-column arithmetic invariant.
 - **speaking rate**: transcript chars per second of audio
-  (``n_chars / (dur_ms/1000)``) outside [min_cps, max_cps] flags
+  (``n_chars / (dur_ms/1000)``) outside [MIN_CPS, MAX_CPS] flags
   transcript/clip pairings that are physically implausible (a 3-word
   transcript on a 30 s clip, a paragraph on 200 ms) — the cheap alignment
   screen run before any ASR-based verification.
@@ -33,6 +33,8 @@ from pyspark.sql import functions as F
 #: bytes per sample for fixed-rate codecs; compressed codecs have no
 #: closed-form length and are skipped (non-checkable, not violations).
 FIXED_RATE_BPS = {"pcm_s16le": 2}
+#: plausible transcript chars per second of audio
+MIN_CPS, MAX_CPS = 20.0, 200.0
 
 
 def expected_payload_bytes(
@@ -71,9 +73,7 @@ def payload_byte_violations(df: DataFrame) -> DataFrame:
     )
 
 
-def speaking_rate_verdicts(
-    df: DataFrame, min_cps: float = 0.5, max_cps: float = 30.0
-) -> DataFrame:
+def speaking_rate_verdicts(df: DataFrame) -> DataFrame:
     """Per-partition speaking-rate plausibility verdicts (part_id,
     check_name, passed, metric_value, threshold, n_rows, n_violations) from
     one conditional-sum aggregate over ``part_id, transcript, dur_ms``. A
@@ -87,7 +87,7 @@ def speaking_rate_verdicts(
     checkable = (
         F.col("transcript").isNotNull() & F.col("dur_ms").isNotNull() & (dur > 0)
     )
-    violated = (cps < F.lit(min_cps)) | (cps > F.lit(max_cps))
+    violated = (cps < F.lit(MIN_CPS)) | (cps > F.lit(MAX_CPS))
     return (
         df.groupBy(F.col("part_id").cast("int").alias("part_id"))
         .agg(

@@ -940,7 +940,7 @@ def wasserstein_binned(
     lo: float,
     hi: float,
     n_bins: int,
-    threshold: float = 0.1,
+    threshold: float,
 ) -> DataFrame:
     """Two-sample Wasserstein-1 distance per group over fixed equi-width
     bins: W1 = sum_bins |CDF_a - CDF_b| * bin_width — the INTEGRAL drift

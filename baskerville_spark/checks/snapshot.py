@@ -34,11 +34,8 @@ from pyspark.sql import functions as F
 _MOD = 1 << 31
 
 
-def partition_signatures(
-    df: DataFrame, part_col: str, hash_cols: list[str] | None = None
-) -> DataFrame:
+def partition_signatures(df: DataFrame, part_col: str, hash_cols: list[str]) -> DataFrame:
     """(partition, n_rows, xor_sig, sum_sig) — one agg pass, narrow out."""
-    hash_cols = hash_cols or [c for c in df.columns if c != part_col]
     h = F.xxhash64(*[F.col(c) for c in hash_cols])
     return df.groupBy(F.col(part_col).alias("partition")).agg(
         F.count(F.lit(1)).alias("n_rows"),
@@ -47,9 +44,7 @@ def partition_signatures(
     )
 
 
-def snapshot_diff(
-    a: DataFrame, b: DataFrame, part_col: str, hash_cols: list[str] | None = None
-) -> DataFrame:
+def snapshot_diff(a: DataFrame, b: DataFrame, part_col: str, hash_cols: list[str]) -> DataFrame:
     """Per-partition status between snapshots: 'added' (only in b),
     'removed' (only in a), 'changed' (both, different row multiset),
     'unchanged'. Row counts from both sides ride along (NULL where the
@@ -77,7 +72,7 @@ def snapshot_diff(
 
 
 def partitions_to_revalidate(
-    a: DataFrame, b: DataFrame, part_col: str, hash_cols: list[str] | None = None
+    a: DataFrame, b: DataFrame, part_col: str, hash_cols: list[str]
 ) -> list:
     """Partition keys needing (re)validation after A -> B: added or
     changed. Driver receives one row per affected partition — bounded by
@@ -92,7 +87,7 @@ def row_level_diff(
     b: DataFrame,
     part_col: str,
     key_cols: list[str],
-    changed_parts: list | None = None,
+    changed_parts: list,
 ) -> DataFrame:
     """Row-level drill-down inside partitions snapshot_diff already marked
     changed: WHICH rows were added, removed, or modified between A and B.
@@ -125,9 +120,8 @@ def row_level_diff(
             "row_level_diff needs at least one payload column to hash; "
             "for a presence-only diff pass key-only snapshots instead"
         )
-    if changed_parts is not None:
-        a = a.where(F.col(part_col).isin(changed_parts))
-        b = b.where(F.col(part_col).isin(changed_parts))
+    a = a.where(F.col(part_col).isin(changed_parts))
+    b = b.where(F.col(part_col).isin(changed_parts))
     h = F.xxhash64(*[F.col(c) for c in hash_cols])
 
     def slim(df: DataFrame) -> DataFrame:

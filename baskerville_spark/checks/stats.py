@@ -126,8 +126,8 @@ def column_stats(
 
 def stats_verdicts(
     stats: DataFrame,
-    null_rate_max: float = 0.05,
-    range_bounds: dict[str, tuple[float, float]] | None = None,
+    null_rate_max: float,
+    range_bounds: dict[str, tuple[float, float]],
 ) -> DataFrame:
     """Threshold stats into verdict rows (reference threshold-verdict shape,
     src/baskerville/models/pipeline_tasks/tasks.py:1784-1794).
@@ -155,7 +155,7 @@ def stats_verdicts(
         f" 'n_rows', {n_total},"
         " 'n_violations', `null_count`)"
     ]
-    for col, (lo, hi) in (range_bounds or {}).items():
+    for col, (lo, hi) in range_bounds.items():
         # struct-or-NULL; array_compact drops the NULLs so the range verdict
         # only materializes on the matching column's stats row. coalesce: an
         # all-NULL partition has NULL min/max → vacuous pass (the null-rate
@@ -178,8 +178,8 @@ def stats_verdicts(
 def robust_outlier_violations(
     df: DataFrame,
     value_col: str,
-    part_col: str = "part_id",
-    id_cols: list[str] | None = None,
+    part_col: str,
+    id_cols: list[str],
 ) -> DataFrame:
     """Median/MAD robust outlier flagging per partition:
     ``|x − median| > OUTLIER_K · 1.4826 · MAD`` (1.4826 scales MAD to σ under
@@ -199,7 +199,7 @@ def robust_outlier_violations(
     v = F.col(value_col).cast("double")
     base = df.where(v.isNotNull()).select(
         F.col(part_col).alias("__part"),
-        *[F.col(c) for c in (id_cols or [])],
+        *[F.col(c) for c in id_cols],
         v.alias("__x"),
     )
     med = base.groupBy("__part").agg(F.percentile(F.col("__x"), 0.5).alias("med"))
@@ -215,7 +215,7 @@ def robust_outlier_violations(
         )
         .select(
             F.col("__part").alias(part_col),
-            *[F.col(c) for c in (id_cols or [])],
+            *[F.col(c) for c in id_cols],
             F.col("__x").alias(value_col),
             F.round("med", 6).alias("med"),
             F.round("mad", 6).alias("mad"),

@@ -150,10 +150,7 @@ def merge_stats_states(
     return states.groupBy(*group_by).agg(*aggs)
 
 
-def finalize_stats(
-    state: DataFrame,
-    distinct_cols: Sequence[str] = (),
-) -> DataFrame:
+def finalize_stats(state: DataFrame, distinct_cols: Sequence[str]) -> DataFrame:
     """Render consumable stats from a state row: adds
     ``{c}_distinct_est`` (long) per distinct col and drops the binary
     sketches (merge the state rows, not this output)."""

@@ -150,11 +150,11 @@ class Constraint:
 
 # -- declaration helpers ----------------------------------------------------
 
-def completeness(name: str, column: str, max_null_rate: float = 0.0) -> Constraint:
+def completeness(name: str, column: str, max_null_rate: float) -> Constraint:
     return Constraint(name, "completeness", column, max_null_rate)
 
 
-def bounds(name: str, column: str, lo, hi, max_rate: float = 0.0) -> Constraint:
+def bounds(name: str, column: str, lo, hi, max_rate: float) -> Constraint:
     return Constraint(name, "bounds", column, max_rate, (lo, hi))
 
 
@@ -162,12 +162,11 @@ def pattern(name: str, column: str, regex: str) -> Constraint:
     return Constraint(name, "pattern", column, 0.0, (regex,))
 
 
-def membership(name: str, column: str, allowed: Sequence,
-               max_rate: float = 0.0) -> Constraint:
+def membership(name: str, column: str, allowed: Sequence, max_rate: float) -> Constraint:
     return Constraint(name, "membership", column, max_rate, (tuple(allowed),))
 
 
-def predicate(name: str, sql_expr: str, max_rate: float = 0.0) -> Constraint:
+def predicate(name: str, sql_expr: str, max_rate: float) -> Constraint:
     """Arbitrary boolean SQL over the row; rows where it is false OR NULL
     count as violations (the rule could not be affirmed)."""
     return Constraint(name, "predicate", None, max_rate, (sql_expr,))
@@ -186,28 +185,21 @@ def approx_distinct_min(name: str, column: str, min_count: int) -> Constraint:
 
 
 def run_suite(
-    df: DataFrame,
-    constraints: Sequence[Constraint],
-    group_by: Optional[Sequence[str]] = None,
+    df: DataFrame, constraints: Sequence[Constraint], group_by: Sequence[str]
 ) -> DataFrame:
     """Compile every constraint into one aggregate over ``df``.
 
-    Returns tidy verdict rows: ``group_by`` columns (if any) then
-    (check_name, col_name, passed, metric_value, threshold, n_rows,
-    n_violations) — len(constraints) rows per group, produced by a single
-    scan + single exchange.
+    Returns tidy verdict rows: the ``group_by`` columns then (check_name,
+    col_name, passed, metric_value, threshold, n_rows, n_violations) —
+    len(constraints) rows per group, produced by a single scan + single
+    exchange. An empty ``group_by`` makes the whole table one group.
     """
     names = [c.name for c in constraints]
     if len(set(names)) != len(names):
         raise ValueError(f"duplicate constraint names: {names}")
     aggs = [e for c in constraints for e in c.agg_exprs()]
-    if group_by:
-        agg_row = df.groupBy(*group_by).agg(*aggs)
-    else:
-        agg_row = df.agg(*aggs)
     verdicts = F.array(*[c.verdict_struct() for c in constraints])
-    keep = [F.col(g) for g in (group_by or [])]
-    return agg_row.select(*keep, F.inline(verdicts))
+    return df.groupBy(*group_by).agg(*aggs).select(*group_by, F.inline(verdicts))
 
 # -- config round-trip --------------------------------------------------------
 #

@@ -48,6 +48,8 @@ def duplicate_keys(
 #: Largest dup_count the cold path buffers in one collect_list; above it
 #: ``duplicate_exemplars`` takes the salted three-level path.
 HOT_THRESHOLD = 200_000
+#: exemplar ids ``duplicate_exemplars`` keeps per key, and its salt count
+EXEMPLAR_K, EXEMPLAR_SALTS = 5, 16
 
 
 def salted_exemplars(rows: DataFrame, key: str, id_col: str, k: int, n_salt: int) -> DataFrame:
@@ -118,14 +120,8 @@ def salted_exemplars(rows: DataFrame, key: str, id_col: str, k: int, n_salt: int
     )
 
 
-def duplicate_exemplars(
-    df: DataFrame,
-    key: str = "clip_id",
-    id_col: str = "clip_id",
-    k: int = 8,
-    n_salt: int = 64,
-) -> DataFrame:
-    """(key, dup_count, exemplar_ids≤k) per duplicated key.
+def duplicate_exemplars(df: DataFrame, key: str, id_col: str) -> DataFrame:
+    """(key, dup_count, exemplar_ids≤EXEMPLAR_K) per duplicated key.
 
     COUNT-FIRST pre-filter (as in functions.dedup.exact_duplicates): an
     algebraic count finds the duplicated keys and a left_semi join
@@ -167,7 +163,7 @@ def duplicate_exemplars(
             slim.groupBy(key)
             .agg(
                 F.count(F.lit(1)).alias("dup_count"),
-                F.slice(F.sort_array(F.collect_list("__id")), 1, k).alias(
+                F.slice(F.sort_array(F.collect_list("__id")), 1, EXEMPLAR_K).alias(
                     "exemplar_ids"
                 ),
             )
@@ -183,10 +179,10 @@ def duplicate_exemplars(
     # semi-join drops NULL keys — eqNullSafe keeps them, and Spark still
     # plans it as a hash join (EqualNullSafe is a supported join key).
     slim = slim.join(dup_keys, F.col(key).eqNullSafe(F.col("__dk")), "left_semi")
-    return salted_exemplars(slim, key, "__id", k, n_salt)
+    return salted_exemplars(slim, key, "__id", EXEMPLAR_K, EXEMPLAR_SALTS)
 
 
-def uniqueness_violations(df: DataFrame, n_salt: int = 64) -> DataFrame:
+def uniqueness_violations(df: DataFrame, n_salt: int) -> DataFrame:
     """Violation rows (part_id, clip_id, check_name, detail) for clip_ids
     duplicated within a ``part_id``."""
     dups = duplicate_keys(df, n_salt=n_salt)

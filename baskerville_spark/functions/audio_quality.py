@@ -49,6 +49,7 @@ CLIP_LEVEL = 32767  # |sample| >= this counts as clipped
 SILENCE_LEVEL = 100  # |sample| <= this counts as silence
 MIN_GAP = 64  # interior silence runs this long split utterances
 BANDWIDTH_N_FFT = 256  # rFFT size of ``audio_bandwidth``
+SPECTRAL_N_FFT = 256  # rFFT size of ``audio_spectral_features``
 DC_SUSPECT_FRAC = 0.02  # |dc_frac| above which ``audio_dc_offset`` flags a clip
 
 
@@ -121,10 +122,10 @@ SPECTRAL_SCHEMA = T.StructType(
 )
 
 
-def audio_spectral_features(clips: DataFrame, n_fft: int = 256) -> DataFrame:
-    """Per-clip spectral features over the first ``n_fft`` samples (zero-pad
-    shorter clips): ``dominant_bin`` = argmax rFFT magnitude over bins
-    1..n_fft/2 (DC excluded) and ``spectral_centroid`` = magnitude-weighted
+def audio_spectral_features(clips: DataFrame) -> DataFrame:
+    """Per-clip spectral features over the first ``SPECTRAL_N_FFT`` samples
+    (zero-pad shorter clips): ``dominant_bin`` = argmax rFFT magnitude over
+    bins 1..n_fft/2 (DC excluded) and ``spectral_centroid`` = magnitude-weighted
     mean bin. The cheap frequency-content screen: silence/DC-only uploads,
     band-limited junk, and sr-mislabel suspects (content above the declared
     Nyquist) all show up here without a full spectrogram pipeline.
@@ -132,6 +133,7 @@ def audio_spectral_features(clips: DataFrame, n_fft: int = 256) -> DataFrame:
     One Arrow pass, one small numpy rFFT per clip (O(n_fft log n_fft) —
     constant per row, independent of clip length), narrow rows out.
     """
+    n_fft = SPECTRAL_N_FFT  # read on the driver: the kernel ships its value
 
     def _spec(pcm: np.ndarray) -> tuple:
         mag = np.abs(np.fft.rfft(_fft_window(pcm, n_fft)))[1:]  # drop DC

@@ -33,6 +33,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 N_HASHES = 5  # bloom bit positions per key
+M_BITS = 1 << 16  # bloom bitmap size of ``bloom_semi_join``
 
 
 def _base_hashes(col: F.Column) -> tuple[F.Column, F.Column]:
@@ -93,8 +94,7 @@ def bloom_semi_join(
     fact: DataFrame,
     dim: DataFrame,
     fact_key: str,
-    dim_key: str | None = None,
-    m_bits: int = 1 << 20,
+    dim_key: str,
 ) -> DataFrame:
     """``fact`` rows whose ``fact_key`` exists in ``dim[dim_key]`` —
     exactly a left-semi join, computed as bloom-prune (map-side, no fact
@@ -105,7 +105,7 @@ def bloom_semi_join(
     rows), which is what turns an all-fact sort-merge join into a
     candidates-only one. NULL fact keys never match (semi-join semantics).
     """
-    dim_key = dim_key or fact_key
+    m_bits = M_BITS  # read on the driver: the UDF ships its value
     spark = fact.sparkSession
     bitmap_bc = spark.sparkContext.broadcast(
         build_bloom_bitmap(dim, dim_key, m_bits, N_HASHES)

@@ -19,9 +19,9 @@ Scale design notes (the whole point of these over naive pairwise):
   left-semi-joined to candidate ids before the pair join), so the verify
   cost is O(candidates), not O(corpus^2). All hashing via the built-in
   xxhash64 — zero Python.
-- **SimHash**: 64 per-bit conditional sums over token hashes in ONE
+- **SimHash**: 60 per-bit conditional sums over md5 token hashes in ONE
   groupBy.agg — wide but JVM-side; near-dup candidates via band equality on
-  16-bit chunks (Hamming <= 3 ⇒ at least one of 4 chunks equal), then an
+  15-bit chunks (Hamming <= 3 ⇒ at least one of 4 chunks equal), then an
   exact popcount(xor) filter — see ``simhash_near_dups``.
 """
 
@@ -34,13 +34,20 @@ from baskerville_spark.checks.uniqueness import salted_exemplars
 
 MINHASH_NUM_HASHES = 32  # signature length
 MINHASH_BANDS = 8  # LSH bands of MINHASH_NUM_HASHES // MINHASH_BANDS rows
+SHINGLE_N = 3  # words per shingle of the Jaccard, MinHash and containment pairs
+JACCARD_THRESHOLD = 0.8  # least shingle Jaccard of a near-dup pair
+JACCARD_MAX_DF = 20  # stop-shingle document frequency of ``ngram_jaccard_pairs``
+CONTAINMENT_MAX_DF = 50  # stop-shingle document frequency of ``shingle_containment_pairs``
+TFIDF_MIN_COSINE = 0.0  # least cosine ``tfidf_cosine_pairs`` emits
+TFIDF_MAX_DF = 400  # stop-term document frequency of ``tfidf_cosine_pairs``
+SIMHASH_BITS = 60  # bits of an md5 token hash, and of a SimHash fingerprint
 
 
 def _tokens():
     return F.split(F.lower(F.col("text")), r"\s+")
 
 
-def word_shingles(df: DataFrame, n: int = 5) -> DataFrame:
+def word_shingles(df: DataFrame, n: int) -> DataFrame:
     """Distinct word n-gram shingles per ``doc_id``: (id, shingle)."""
     toks = _tokens()
     k = F.size(toks) - (n - 1)
@@ -91,8 +98,9 @@ def exact_duplicates(
     )
 
 
-def _jaccard_pairs_over(sh: DataFrame, threshold: float, candidates: DataFrame | None) -> DataFrame:
-    """Pair Jaccard from a (id, shingle) table; sizes and intersections use
+def _jaccard_pairs_over(sh: DataFrame, candidates: DataFrame | None) -> DataFrame:
+    """Pairs with Jaccard >= ``JACCARD_THRESHOLD`` from a (id, shingle)
+    table; sizes and intersections use
     the SAME shingle set so the metric is internally consistent.
 
     ``candidates`` (id_a, id_b), when given, restricts the pair join to
@@ -133,31 +141,26 @@ def _jaccard_pairs_over(sh: DataFrame, threshold: float, candidates: DataFrame |
                 / (F.col("n_a") + F.col("n_b") - F.col("n_common"))
             ).cast("double").alias("jaccard"),
         )
-        .where(F.col("jaccard") >= threshold)
+        .where(F.col("jaccard") >= JACCARD_THRESHOLD)
     )
 
 
-def ngram_jaccard_pairs(
-    df: DataFrame,
-    n: int = 5,
-    threshold: float = 0.5,
-    max_df: int = 1000,
-) -> DataFrame:
-    """Document pairs with shingle-Jaccard >= threshold.
+def ngram_jaccard_pairs(df: DataFrame) -> DataFrame:
+    """Document pairs with shingle-Jaccard >= ``JACCARD_THRESHOLD``.
 
     inverted index → pair counts → |A∩B| / (|A|+|B|−|A∩B|). Shingles with
-    document frequency > max_df are dropped BEFORE both the pair join and
-    the size computation (stop-shingle guard against the quadratic join
-    blowup at corpus scale); the metric is Jaccard over the filtered
+    document frequency > ``JACCARD_MAX_DF`` are dropped BEFORE both the pair
+    join and the size computation (stop-shingle guard against the quadratic
+    join blowup at corpus scale); the metric is Jaccard over the filtered
     shingle space — identical to true Jaccard when nothing is filtered.
     """
-    return _jaccard_pairs_over(_low_df_shingles(df, n, max_df), threshold, candidates=None)
+    return _jaccard_pairs_over(_low_df_shingles(df, JACCARD_MAX_DF), candidates=None)
 
 
-def _low_df_shingles(df: DataFrame, n: int, max_df: int) -> DataFrame:
-    """``word_shingles`` minus the stop shingles: those in more than
-    ``max_df`` documents."""
-    sh = word_shingles(df, n)
+def _low_df_shingles(df: DataFrame, max_df: int) -> DataFrame:
+    """``SHINGLE_N``-word shingles minus the stop shingles: those in more
+    than ``max_df`` documents."""
+    sh = word_shingles(df, SHINGLE_N)
     low_df = (
         sh.groupBy("shingle")
         .agg(F.count(F.lit(1)).alias("df_"))
@@ -167,9 +170,10 @@ def _low_df_shingles(df: DataFrame, n: int, max_df: int) -> DataFrame:
     return sh.join(low_df, "shingle", "left_semi")
 
 
-def minhash_signatures(df: DataFrame, n: int = 5) -> DataFrame:
-    """(id, sig: array<bigint>) MinHash signature — one groupBy, xxhash64-based."""
-    sh = word_shingles(df, n)
+def minhash_signatures(df: DataFrame) -> DataFrame:
+    """(id, sig: array<bigint>) MinHash signature of the ``SHINGLE_N``-word
+    shingles — one groupBy, xxhash64-based."""
+    sh = word_shingles(df, SHINGLE_N)
     mins = [
         F.min(F.xxhash64(F.lit(i), F.col("shingle"))).alias(f"h{i}")
         for i in range(MINHASH_NUM_HASHES)
@@ -180,18 +184,14 @@ def minhash_signatures(df: DataFrame, n: int = 5) -> DataFrame:
     )
 
 
-def minhash_lsh_pairs(
-    df: DataFrame,
-    n: int = 5,
-    verify_threshold: float = 0.5,
-) -> DataFrame:
+def minhash_lsh_pairs(df: DataFrame) -> DataFrame:
     """Near-dup pairs via banded MinHash, verified with exact shingle
-    Jaccard >= ``verify_threshold`` on the candidates ONLY (the
+    Jaccard >= ``JACCARD_THRESHOLD`` on the candidates ONLY (the
     cheap-then-exact pattern): shingles are left-semi-joined to candidate
     ids before the verify pair join, so the exact pass costs O(candidate
     docs), never the full-corpus quadratic join."""
     rows_per_band = MINHASH_NUM_HASHES // MINHASH_BANDS
-    sigs = minhash_signatures(df, n)
+    sigs = minhash_signatures(df)
     banded = sigs.select(
         "id",
         F.explode(
@@ -216,39 +216,32 @@ def minhash_lsh_pairs(
         .select("id_a", "id_b")
         .distinct()
     )
-    return _jaccard_pairs_over(word_shingles(df, n), verify_threshold, candidates=cand)
+    return _jaccard_pairs_over(word_shingles(df, SHINGLE_N), candidates=cand)
 
 
-def _token_hash(col, hasher: str):
-    """(hash Column, n_bits) for a token column under the named hasher.
-
-    - ``xxhash64`` (default): full 64 bits, fastest — the scale path.
-    - ``md5``: top 15 hex chars of md5 = 60 bits, always non-negative. Chosen
-      because it is SQL-PORTABLE: DuckDB reproduces it bit-exactly as
-      ``('0x' || substr(md5(tok), 1, 15))::BIGINT``, which lets the q20/q35
-      gates be hash-checked against an independent oracle (xxhash64 has no
-      DuckDB equivalent). 60 bits so the value fits signed BIGINT in both
-      engines with identical string representation.
+def _token_hash(col):
+    """The ``SIMHASH_BITS``-bit hash of a token column: the top 15 hex chars
+    of md5, always non-negative. It is SQL-PORTABLE: DuckDB reproduces it
+    bit-exactly as ``('0x' || substr(md5(tok), 1, 15))::BIGINT``, which lets
+    the q20/q35 gates be hash-checked against an independent oracle. 60 bits
+    so the value fits signed BIGINT in both engines with identical string
+    representation.
     """
-    if hasher == "xxhash64":
-        return F.xxhash64(col), 64
-    if hasher == "md5":
-        return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("long"), 60
-    raise ValueError(f"unknown hasher {hasher!r} (use 'xxhash64' or 'md5')")
+    return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("long")
 
 
-def simhash(df: DataFrame, hasher: str = "xxhash64") -> DataFrame:
-    """(id, simhash: bigint, chunks: array<int>) SimHash over tokens —
-    64-bit for the xxhash64 hasher, 60-bit for the SQL-portable md5 hasher.
+def simhash(df: DataFrame) -> DataFrame:
+    """(id, simhash: bigint, chunks: array<int>) ``SIMHASH_BITS``-bit
+    SimHash over md5 token hashes.
 
     Per-bit weighted sums as n_bits conditional-sum aggregates in one pass;
     the four (n_bits/4)-wide chunks support banded Hamming-neighbour joins.
     """
-    hcol, n_bits = _token_hash(F.col("tok"), hasher)
+    n_bits = SIMHASH_BITS
     tok = (
         df.select(F.col("doc_id").alias("id"), F.explode(_tokens()).alias("tok"))
         .where(F.col("tok") != "")
-        .select("id", hcol.alias("h"))
+        .select("id", _token_hash(F.col("tok")).alias("h"))
     )
     bit_sums = [
         F.sum(
@@ -273,15 +266,15 @@ def simhash(df: DataFrame, hasher: str = "xxhash64") -> DataFrame:
     return out.select("id", "simhash", chunks.alias("chunks"))
 
 
-def simhash_near_dups(df: DataFrame, hasher: str = "xxhash64") -> DataFrame:
+def simhash_near_dups(df: DataFrame) -> DataFrame:
     """(id_a, id_b, hamming) pairs with SimHash Hamming distance <= 3.
 
-    Pigeonhole banding: Hamming <= 3 over 64 bits implies at least one of
-    the four 16-bit chunks is EQUAL, so the candidate join is an equi-join
+    Pigeonhole banding: Hamming <= 3 over 60 bits implies at least one of
+    the four 15-bit chunks is EQUAL, so the candidate join is an equi-join
     on (band, chunk) — never all-pairs (and lossless only up to distance
     3). Candidates are then filtered with the exact popcount of the XOR.
     """
-    s = simhash(df, hasher=hasher)
+    s = simhash(df)
     exploded = s.select(
         "id", "simhash", F.posexplode("chunks").alias("band", "chunk")
     )
@@ -306,12 +299,8 @@ def simhash_near_dups(df: DataFrame, hasher: str = "xxhash64") -> DataFrame:
     )
 
 
-def tfidf_cosine_pairs(
-    df: DataFrame,
-    threshold: float = 0.3,
-    max_df: int = 1000,
-) -> DataFrame:
-    """Document pairs with TF-IDF cosine similarity >= threshold — sparse
+def tfidf_cosine_pairs(df: DataFrame) -> DataFrame:
+    """Document pairs with TF-IDF cosine similarity >= ``TFIDF_MIN_COSINE`` — sparse
     lexical similarity with NO embeddings, via an inverted term index
     (the prefix-filtering family; a from-scratch extension, the reference
     has no similarity operator at all).
@@ -322,7 +311,7 @@ def tfidf_cosine_pairs(
     product that touches only co-occurring terms, never a dense matmul.
 
     Scale design mirrors ``ngram_jaccard_pairs``: terms with document
-    frequency > ``max_df`` are dropped BEFORE the pair join AND before
+    frequency > ``TFIDF_MAX_DF`` are dropped BEFORE the pair join AND before
     the norms (stop-word guard against the quadratic fan-out of hot
     terms; the metric is cosine over the filtered term space — identical
     to true cosine when nothing is filtered, and the filtered terms are
@@ -348,7 +337,7 @@ def tfidf_cosine_pairs(
     dfreq = (
         tf.groupBy("term")
         .agg(F.count(F.lit(1)).alias("df_"))
-        .where(F.col("df_") <= max_df)
+        .where(F.col("df_") <= TFIDF_MAX_DF)
     )
     weighted = (
         tf.join(dfreq, "term")
@@ -381,11 +370,11 @@ def tfidf_cosine_pairs(
             "id_b",
             (F.col("dot") / (F.col("norm_a") * F.col("norm_b"))).alias("cosine"),
         )
-        .where(F.col("cosine") >= threshold)
+        .where(F.col("cosine") >= TFIDF_MIN_COSINE)
     )
 
 
-def shingle_containment_pairs(df: DataFrame, max_df: int = 1000) -> DataFrame:
+def shingle_containment_pairs(df: DataFrame) -> DataFrame:
     """ASYMMETRIC near-dup: containment(A⊆B) = |A∩B| / |A| — the metric
     that catches a document plus its truncation/excerpt, which Jaccard
     structurally under-scores (a 10%-length excerpt of a clean doc has
@@ -397,12 +386,12 @@ def shingle_containment_pairs(df: DataFrame, max_df: int = 1000) -> DataFrame:
     Emits (id_a, id_b, containment_a, containment_b) over word 3-gram
     shingles for pairs where EITHER direction >= 0.8 — both directions ride
     the same pair aggregate, no second join. Same scale shape as
-    ``ngram_jaccard_pairs``: inverted shingle index, max_df stop-shingle
+    ``ngram_jaccard_pairs``: inverted shingle index, ``CONTAINMENT_MAX_DF`` stop-shingle
     guard applied before the join AND the sizes (the metric is
     containment over the filtered space), window-carried sizes keeping
     the a/b branches ReuseExchange-identical.
     """
-    sized = _low_df_shingles(df, 3, max_df).withColumn(
+    sized = _low_df_shingles(df, CONTAINMENT_MAX_DF).withColumn(
         "n_sh", F.count(F.lit(1)).over(Window.partitionBy("id"))
     )
     a = sized.select(F.col("id").alias("id_a"), F.col("n_sh").alias("n_a"), "shingle")

@@ -304,7 +304,6 @@ def update_feature_vector(
     keys: list[str],
     specs: list[UpdateSpec],
     square_variance: bool = True,
-    round_dp: int | None = 4,
 ) -> DataFrame:
     """Merge a batch's fresh feature vectors with the cached past vectors.
 
@@ -348,7 +347,5 @@ def update_feature_vector(
         upd = F.when(
             F.col("__p_present").isNull(), c(spec.cols[0])
         ).otherwise(_updated(spec, p, c, square_variance))
-        if round_dp is not None:
-            upd = F.round(upd, round_dp)
         out_cols.append(upd.alias(spec.name))
     return joined.select(*out_cols)

@@ -177,7 +177,7 @@ def _require_integral_ids(vertices: DataFrame, edges: DataFrame) -> None:
                 )
 
 
-def star_edges(buckets: DataFrame, id_col: str = "id") -> DataFrame:
+def star_edges(buckets: DataFrame, id_col: str) -> DataFrame:
     """(id, bucket) membership rows -> (src, dst) star edges to each
     bucket's minimum id.
 
@@ -206,7 +206,7 @@ BIGSTAR_MAX_ITERS = 30
 def connected_components(
     vertices: DataFrame,
     edges: DataFrame,
-    init_labels: DataFrame | None = None,
+    init_labels: DataFrame,
 ) -> DataFrame:
     """Min-label propagation over an undirected edge list.
 
@@ -234,9 +234,11 @@ def connected_components(
     ``init_labels`` (id, label) seeds each vertex below its own id —
     correct iff every seed is the id of a vertex in the SAME component
     (propagation converges to the component min of the seeds; a
-    same-component seed keeps that min = the true vertex min).
-    ``dedup_clusters`` uses it to pre-fold the first propagation round
-    into the bucket-root aggregate it has already paid for.
+    same-component seed keeps that min = the true vertex min). A vertex
+    without a seed starts at its own id, so identity seeds give plain
+    propagation. ``dedup_clusters`` seeds with bucket roots, pre-folding
+    the first propagation round into the bucket-root aggregate it has
+    already paid for.
     """
     _require_integral_ids(vertices, edges)
     ckpt = _Ckpt()
@@ -250,16 +252,13 @@ def connected_components(
         .distinct()
     )
     verts = vertices.select("id").distinct()
-    if init_labels is None:
-        labels = ckpt.lazy(verts.withColumn("label", F.col("id")))
-    else:
-        seeds = init_labels.select("id", F.col("label").alias("__seed"))
-        labels = ckpt.lazy(
-            verts.join(seeds, "id", "left").select(
-                "id",
-                F.least(F.col("id"), F.coalesce("__seed", "id")).alias("label"),
-            )
+    seeds = init_labels.select("id", F.col("label").alias("__seed"))
+    labels = ckpt.lazy(
+        verts.join(seeds, "id", "left").select(
+            "id",
+            F.least(F.col("id"), F.coalesce("__seed", "id")).alias("label"),
         )
+    )
     # decimal(38,0): a sum of 10^12 labels each up to ~10^12 overflows
     # long; the witness must stay exact or "unchanged" could be a wrap.
     # This aggregate is ALSO the action that materializes the lazy
@@ -478,7 +477,7 @@ def dedup_clusters(
     )
 
 
-def prior_label_membership(labels: DataFrame, id_col: str = "id") -> DataFrame:
+def prior_label_membership(labels: DataFrame, id_col: str) -> DataFrame:
     """Fold a previous clustering run's (id, cluster_id) labels into
     bucket-membership rows — term (b) of ``incremental_membership``'s
     recipe, exposed separately for pipelines that assemble their own
@@ -498,7 +497,7 @@ def incremental_membership(
     new_membership: DataFrame,
     prior_labels: DataFrame,
     retained_index: DataFrame,
-    id_col: str = "id",
+    id_col: str,
 ) -> DataFrame:
     """The full three-term membership for INCREMENTAL ``dedup_clusters``
     — at 10^12 rows a new ingest batch never re-fingerprints or

@@ -46,17 +46,21 @@ def file_skip_plan(file_stats: DataFrame, lo: float, hi: float) -> DataFrame:
     )
 
 
-def z_value(x: Column, y: Column, bits: int = 16) -> Column:
+#: bits of each column ``z_value`` interleaves
+Z_BITS = 8
+
+
+def z_value(x: Column, y: Column) -> Column:
     """Interleaved-bits z-order value of two non-negative int columns
     (x's bit i -> bit 2i, y's bit i -> bit 2i+1): the sort key that keeps
     BOTH columns' per-file min/max ranges tight after a range repartition
     + sort, so either column's predicate can skip files. Pure bit algebra
-    (shiftright/bitwise AND/shiftleft, summed) — ANSI-safe: with bits<=31
+    (shiftright/bitwise AND/shiftleft, summed) — ANSI-safe: with Z_BITS<=31
     every intermediate fits an int64 without overflow. Values outside
-    [0, 2^bits) must be range-clamped or bucketed by the caller first
+    [0, 2^Z_BITS) must be range-clamped or bucketed by the caller first
     (standard z-order practice: z-order the BUCKETS, not raw values)."""
     z = F.lit(0).cast("long")
-    for i in range(bits):
+    for i in range(Z_BITS):
         xb = F.shiftright(x.cast("long"), i).bitwiseAND(F.lit(1))
         yb = F.shiftright(y.cast("long"), i).bitwiseAND(F.lit(1))
         z = z + F.shiftleft(xb, 2 * i) + F.shiftleft(yb, 2 * i + 1)

@@ -216,11 +216,16 @@ def _iter_video_frames(payload: bytes, fmt: str):
         yield i, np.frombuffer(payload, np.uint8, count=fsz, offset=12 + i * fsz).reshape(h, w)
 
 
-def sample_frames(df: DataFrame, every_k: int = 10) -> DataFrame:
+#: ``sample_frames`` keeps every FRAME_EVERY_K-th frame
+FRAME_EVERY_K = 5
+
+
+def sample_frames(df: DataFrame) -> DataFrame:
     """Frame sampling over binary video payloads: mapInPandas fans each
-    video out to one NARROW row per sampled frame (every ``every_k``-th) —
-    pixels never return to the JVM; downstream joins/aggs see only
-    (item_id, frame_idx, features)."""
+    video out to one NARROW row per sampled frame (every
+    ``FRAME_EVERY_K``-th) — pixels never return to the JVM; downstream
+    joins/aggs see only (item_id, frame_idx, features)."""
+    every_k = FRAME_EVERY_K  # read on the driver: the kernel ships its value
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for b in batches:

@@ -20,8 +20,15 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 TOP_K = 10  # rows ``cosine_topk`` and ``ivf_topk`` return
+BATCH_TOP_K = 5  # rows per query ``cosine_topk_batched`` returns
 LSH_DIM = 64  # embedding dimension ``hyperplane_lsh_pairs`` expects
 LSH_N_PLANES = 12  # hyperplanes (signature bits) per LSH table
+LSH_N_TABLES = 4  # independent LSH tables
+LSH_MIN_COSINE = 0.9  # least cosine of a ``hyperplane_lsh_pairs`` pair
+BRUTE_FORCE_MIN_COSINE = 0.45  # least cosine of a ``brute_force_pairs`` pair
+IVF_N_CENTROIDS = 8  # coarse-quantizer cells ``train_ivf_centroids`` fits
+IVF_SAMPLE_MOD = 3  # ``train_ivf_centroids`` samples about 1 in IVF_SAMPLE_MOD rows
+IVF_NPROBE = 2  # cells ``ivf_topk`` probes
 
 
 def _stack_valid(emb: pd.Series, expected_dim: int | None = None) -> tuple[np.ndarray, np.ndarray]:
@@ -104,15 +111,11 @@ def cosine_topk(df: DataFrame, query_vec: list[float]) -> DataFrame:
     )
 
 
-def hyperplane_lsh_pairs(
-    df: DataFrame,
-    n_tables: int = 2,
-    threshold: float = 0.85,
-) -> DataFrame:
-    """Near-duplicate vector pairs: SRP buckets → candidate self-join →
-    exact cosine verify. n_tables independent sets of ``LSH_N_PLANES``
-    planes (seeded, over ``LSH_DIM``-dim vectors) trade recall for join
-    fan-out.
+def hyperplane_lsh_pairs(df: DataFrame) -> DataFrame:
+    """Near-duplicate vector pairs (cosine >= ``LSH_MIN_COSINE``): SRP
+    buckets → candidate self-join → exact cosine verify. ``LSH_N_TABLES``
+    independent sets of ``LSH_N_PLANES`` planes (seeded, over
+    ``LSH_DIM``-dim vectors) trade recall for join fan-out.
 
     Plan shape (the banded-LSH pattern, same as MinHash): ALL tables'
     bucket ids are computed in one pass and exploded to slim
@@ -122,7 +125,7 @@ def hyperplane_lsh_pairs(
     the distinct."""
     from pyspark.sql.types import ArrayType, LongType
 
-    dim, n_planes = LSH_DIM, LSH_N_PLANES  # the UDF ships these values
+    dim, n_planes, n_tables = LSH_DIM, LSH_N_PLANES, LSH_N_TABLES  # the UDF ships these values
     rng = np.random.default_rng(42)
     # one (n_tables*n_planes, dim) matrix; same draw order as per-table calls
     planes = np.vstack([rng.standard_normal((n_planes, dim)) for _ in range(n_tables)])
@@ -158,14 +161,10 @@ def hyperplane_lsh_pairs(
     )
 
     va, vb = _pair_sides(base)
-    return _cosine_at_least(cand.join(va, "id_a").join(vb, "id_b"), threshold)
+    return _cosine_at_least(cand.join(va, "id_a").join(vb, "id_b"), LSH_MIN_COSINE)
 
 
-def ivf_training_sample(
-    df: DataFrame,
-    sample_mod: int = 10,
-    max_train_rows: int = 4096,
-) -> DataFrame:
+def ivf_training_sample(df: DataFrame, sample_mod: int, max_train_rows: int) -> DataFrame:
     """Deterministic, HARD-CAPPED training sample for the IVF quantizer.
 
     Keep-decision is an md5-threshold on the id (the q28 stratified-sampling
@@ -190,13 +189,10 @@ def ivf_training_sample(
     return base.where(keep).select("embedding").limit(max_train_rows)
 
 
-def train_ivf_centroids(
-    df: DataFrame,
-    n_centroids: int = 16,
-    sample_mod: int = 10,
-) -> np.ndarray:
-    """Coarse-quantizer centroids for IVF: 10 Lloyd iterations on a
-    deterministic hash-threshold sample, trained driver-side.
+def train_ivf_centroids(df: DataFrame) -> np.ndarray:
+    """``IVF_N_CENTROIDS`` coarse-quantizer centroids for IVF: 10 Lloyd
+    iterations on a deterministic hash-threshold sample of about 1 in
+    ``IVF_SAMPLE_MOD`` rows, trained driver-side.
 
     The sample is HARD-BOUNDED by 256·n_centroids rows (standard IVF
     practice: the quantizer trains on a bounded sample; assignment is the
@@ -204,14 +200,15 @@ def train_ivf_centroids(
     Deterministic: fixed sample, fixed init, fixed iteration count — unlike
     parallel k-means, whose result depends on partitioning.
     """
+    n_centroids = IVF_N_CENTROIDS
     sample_rows = [
         np.asarray(r[0], dtype=np.float64)
-        for r in ivf_training_sample(df, sample_mod, 256 * n_centroids).collect()
+        for r in ivf_training_sample(df, IVF_SAMPLE_MOD, 256 * n_centroids).collect()
     ]
     if len(sample_rows) < n_centroids:
         raise ValueError(
             f"IVF training sample has {len(sample_rows)} vectors < "
-            f"n_centroids={n_centroids}; lower sample_mod or n_centroids"
+            f"IVF_N_CENTROIDS={n_centroids}; lower IVF_SAMPLE_MOD or IVF_N_CENTROIDS"
         )
     sample = np.vstack(sample_rows)
     # Farthest-point (max-min) seeding: fully deterministic given the sample
@@ -262,16 +259,15 @@ def ivf_topk(
     df: DataFrame,
     query_vec: list[float],
     centroids: np.ndarray,
-    nprobe: int = 4,
 ) -> DataFrame:
-    """IVF approximate top-``TOP_K``: probe only the ``nprobe`` clusters
+    """IVF approximate top-``TOP_K``: probe only the ``IVF_NPROBE`` clusters
     nearest the query, brute-force cosine inside them. At scale the assignment is a
     write-once index column (partition/cluster-prune the scan); the probe
     filter is a pushed-down ``cluster IN (...)`` predicate, so the scan
-    touches nprobe/n_centroids of the data instead of all of it."""
+    touches IVF_NPROBE/n_centroids of the data instead of all of it."""
     cent = np.asarray(centroids, dtype=np.float64)
     q = np.asarray(query_vec, dtype=np.float64)
-    probe = np.argsort(((cent - q) ** 2).sum(1))[:nprobe].tolist()
+    probe = np.argsort(((cent - q) ** 2).sum(1))[:IVF_NPROBE].tolist()
     assigned = ivf_assign(df, cent)
     cand = assigned.where(F.col("cluster").isin([int(p) for p in probe]))
     qcol = F.array(*[F.lit(float(x)) for x in q])
@@ -284,25 +280,21 @@ def ivf_topk(
     )
 
 
-def brute_force_pairs(
-    df: DataFrame,
-    threshold: float = 0.85,
-) -> DataFrame:
-    """O(n²) all-pairs cosine — the exact baseline (LSH is the scale path).
+def brute_force_pairs(df: DataFrame) -> DataFrame:
+    """O(n²) all-pairs cosine >= ``BRUTE_FORCE_MIN_COSINE`` — the exact
+    baseline (LSH is the scale path).
 
     Norms are precomputed per vector BEFORE the join, so each pair costs one
     array pass (the dot product) instead of three.
     """
     a, b = _pair_sides(_with_norms(df))
-    return _cosine_at_least(a.crossJoin(b).where(F.col("id_a") < F.col("id_b")), threshold)
+    return _cosine_at_least(
+        a.crossJoin(b).where(F.col("id_a") < F.col("id_b")), BRUTE_FORCE_MIN_COSINE
+    )
 
 
-def cosine_topk_batched(
-    df: DataFrame,
-    queries: DataFrame,
-    k: int = 10,
-) -> DataFrame:
-    """Batch retrieval: exact cosine top-k PER QUERY VECTOR
+def cosine_topk_batched(df: DataFrame, queries: DataFrame) -> DataFrame:
+    """Batch retrieval: exact cosine top-``BATCH_TOP_K`` PER QUERY VECTOR
     (query_id, id, rank, cosine_sim) — the evaluation-harness shape
     (recall@k sweeps, dedup-vs-eval probes) where ``cosine_topk``'s single
     constant vector doesn't fit.
@@ -334,6 +326,6 @@ def cosine_topk_batched(
     w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("id"))
     return (
         scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
+        .where(F.col("rank") <= BATCH_TOP_K)
         .select("query_id", "id", "rank", F.col("cos").alias("cosine_sim"))
     )

@@ -232,14 +232,18 @@ def pii_scrub(df):
     return out.withColumn("pii_total", total)
 
 
-def vocab_top_tokens(df: DataFrame, vocab_size: int = 1000) -> DataFrame:
-    """Top-``vocab_size`` tokens by corpus frequency (ties broken by token
+#: tokens ``vocab_top_tokens`` keeps
+VOCAB_SIZE = 500
+
+
+def vocab_top_tokens(df: DataFrame) -> DataFrame:
+    """Top-``VOCAB_SIZE`` tokens by corpus frequency (ties broken by token
     order for determinism): (token, cnt, rank).
 
     Scale: explode -> ONE count aggregate (map-side combine absorbs token
     skew: each task emits at most |local vocab| partial counts regardless
     of how hot a token is) -> orderBy+limit, which Spark executes as
-    per-partition TakeOrdered + driver merge of vocab_size rows — no
+    per-partition TakeOrdered + driver merge of VOCAB_SIZE rows — no
     global sort shuffle.
     """
     toks = F.explode(F.split(F.trim(F.lower(F.col("text"))), r"\s+")).alias("token")
@@ -252,7 +256,7 @@ def vocab_top_tokens(df: DataFrame, vocab_size: int = 1000) -> DataFrame:
     w = Window.orderBy(F.desc("cnt"), F.asc("token"))
     return (
         counts.orderBy(F.desc("cnt"), F.asc("token"))
-        .limit(vocab_size)
+        .limit(VOCAB_SIZE)
         .withColumn("rank", F.row_number().over(w))
     )
 

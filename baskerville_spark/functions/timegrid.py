@@ -18,15 +18,18 @@ the slot-collapse aggregate and the window (HashPartitioning on a prefix
 of the grouping keys satisfies both distributions).
 
 Row amplification is the hazard at scale: one observation before a
-year-long gap at 1 s steps would emit 3×10^7 rows. ``max_fill`` caps the
+year-long gap at 1 s steps would emit 3×10^7 rows. ``MAX_FILL`` caps the
 span per gap (further slots stay ABSENT, which downstream rolling ops
-read as "no data" — the honest answer); unbounded fill is opt-in.
+read as "no data" — the honest answer).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+#: carried slots ``gap_fill`` emits after an observation, at most
+MAX_FILL = 8
 
 
 def gap_fill(
@@ -36,7 +39,6 @@ def gap_fill(
     value_cols: list[str],
     step: int,
     order_col: str,
-    max_fill: int | None = None,
 ) -> DataFrame:
     """Regularize (keys, slot) series: one row per grid slot from each
     key's first to last observation, values forward-filled.
@@ -46,7 +48,9 @@ def gap_fill(
     keeps the operator ANSI-pure). Multiple observations in one slot
     collapse to the one with the greatest ``order_col`` (must be unique
     within (keys, slot) for determinism — an event id, not a timestamp).
-    Returns keys + ``grid_slot`` + value_cols + ``is_observed``.
+    A gap longer than ``MAX_FILL`` slots is filled for its first
+    ``MAX_FILL`` slots only. Returns keys + ``grid_slot`` + value_cols +
+    ``is_observed``.
     """
     reserved = {"grid_slot", "is_observed", "__slot", "__end"}
     clash = reserved & set([*keys, slot_col, *value_cols])
@@ -61,9 +65,9 @@ def gap_fill(
     )
     w = Window.partitionBy(*keys).orderBy(slot_col)
     nxt = F.lead(slot_col).over(w)
-    fill_end = F.coalesce(nxt - step, F.col(slot_col))
-    if max_fill is not None:
-        fill_end = F.least(fill_end, F.col(slot_col) + step * int(max_fill))
+    fill_end = F.least(
+        F.coalesce(nxt - step, F.col(slot_col)), F.col(slot_col) + step * MAX_FILL
+    )
     spans = obs.withColumn("__end", fill_end)
     return spans.select(
         *keys,

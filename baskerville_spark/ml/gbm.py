@@ -32,6 +32,7 @@ from pyspark.sql import functions as F
 from baskerville_spark.ml.iforest import MAX_TRAIN_ROWS, training_sample
 
 LEARNING_RATE = 0.3
+N_ROUNDS = 30  # boosted stumps per model
 
 
 @dataclass(frozen=True)
@@ -94,9 +95,8 @@ def train_gbm(
     id_col: str,
     feature_cols: list[str],
     label_col: str,
-    n_rounds: int = 50,
 ) -> GBMClassifier:
-    """Fit ``n_rounds`` stumps at ``LEARNING_RATE`` on the capped
+    """Fit ``N_ROUNDS`` stumps at ``LEARNING_RATE`` on the capped
     deterministic sample; labels must be 0/1."""
     sample = training_sample(df, id_col, feature_cols + [label_col], MAX_TRAIN_ROWS)
     if len(sample) < 2:
@@ -109,7 +109,7 @@ def train_gbm(
     orders = [np.argsort(x[:, f], kind="stable") for f in range(x.shape[1])]
     logit = np.full(len(y), bias)
     feat, thr, left, right = [], [], [], []
-    for _ in range(n_rounds):
+    for _ in range(N_ROUNDS):
         resid = y - 1.0 / (1.0 + np.exp(-logit))  # logistic-loss gradient
         f, t, lv, rv = _fit_stump(x, resid, orders)
         feat.append(f)

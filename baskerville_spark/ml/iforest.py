@@ -133,6 +133,8 @@ def _build_tree(
 
 #: driver-side rows the iForest and GBM fits train on
 MAX_TRAIN_ROWS = 4096
+#: trees per forest, and the seed of their row and split draws
+N_TREES, SEED = 50, 11
 
 
 def training_sample(
@@ -163,19 +165,18 @@ def train_iforest(
     df: DataFrame,
     id_col: str,
     feature_cols: list[str],
-    n_trees: int = 100,
-    seed: int = 42,
 ) -> IsolationForest:
-    """Fit on a ``MAX_TRAIN_ROWS``-capped sample; each tree subsamples
-    ψ = 256 rows (the paper default) and grows at most 10 levels
-    (reference jar numTrees=100 / maxDepth=10, anomaly_model.py:160-176)."""
+    """Fit ``N_TREES`` trees on a ``MAX_TRAIN_ROWS``-capped sample; each
+    tree subsamples ψ = 256 rows (the paper default) and grows at most 10
+    levels (reference jar numTrees=100 / maxDepth=10,
+    anomaly_model.py:160-176)."""
     sample = training_sample(df, id_col, feature_cols, MAX_TRAIN_ROWS)
     if len(sample) < 2:
         raise ValueError(f"training sample has {len(sample)} rows < 2")
-    rng = np.random.default_rng(seed)
+    rng = np.random.default_rng(SEED)
     psi = min(256, len(sample))
     feats, thrs, lefts, rights, sizes = [], [], [], [], []
-    for _ in range(n_trees):
+    for _ in range(N_TREES):
         rows = rng.choice(len(sample), size=psi, replace=False)
         f, t, l, r, s = _build_tree(rng, sample[rows], 10)
         feats.append(f)
@@ -218,7 +219,7 @@ def top_anomalies(
     forest: IsolationForest,
     id_col: str,
     feature_cols: list[str],
-    k: int = 10,
+    k: int,
 ) -> DataFrame:
     """Top-k most anomalous rows — TakeOrdered (per-partition top-k merged
     on the driver), never a global sort; the reference instead thresholded

@@ -79,7 +79,6 @@ def refresh_feature_cache(
             keys,
             specs,
             square_variance=False,
-            round_dp=None,
         )
         untouched = past.join(
             fresh.select(*keys), on=keys, how="left_anti"

@@ -220,7 +220,8 @@ def run_validation(
     clips: DataFrame,
     transcript_ref: DataFrame | None = None,
     baseline_rows: list[Row] | None = None,
-    cfg: ValidationConfig | None = None,
+    *,
+    cfg: ValidationConfig,
 ) -> ValidationResult:
     """Compile ``CHECKS`` into the verdict / violation / stats plans.
 
@@ -230,7 +231,6 @@ def run_validation(
     At cluster scale the equivalent is writing these intermediates to the
     results table and reading back — same O(output) cost.
     """
-    cfg = cfg or ValidationConfig()
     # slim fills first, so the stats and the checks read its cache
     slim = clips.select(*[c for c in META_COLS if c in clips.columns]).persist()
     _fill([slim])
@@ -328,7 +328,8 @@ def run_resumable(
     out_dir: str,
     transcript_ref_path: str | None = None,
     baseline_path: str | None = None,
-    cfg: ValidationConfig | None = None,
+    *,
+    cfg: ValidationConfig,
 ) -> list[int]:
     """Resumable run over a partitioned clip table.
 
@@ -337,7 +338,6 @@ def run_resumable(
     layout), validates the rest in ONE Spark job, then commits a manifest
     row per partition. Returns the list of partitions processed this run.
     """
-    cfg = cfg or ValidationConfig()
     started = datetime.now(timezone.utc)
     # commits write local files: refuse a remote manifest before any read,
     # not after every partition is validated and every sink written
@@ -370,7 +370,7 @@ def run_resumable(
         drift_mod.load_baseline(spark, baseline_path) if baseline_path else None
     )
 
-    res = run_validation(spark, clips, tref, baseline_rows, cfg)
+    res = run_validation(spark, clips, tref, baseline_rows, cfg=cfg)
 
     from baskerville_spark.runtime.metrics import observe_violations
 

@@ -122,17 +122,16 @@ def encrypt_columns(
     df: DataFrame,
     cols: list[str],
     key: str,
-    aad_col: str | None = None,
+    aad_col: str,
 ) -> DataFrame:
     """AES-GCM-encrypt ``cols`` in place (values become binary).
 
     ``key`` must be 16/24/32 bytes (the reference derives a 32-byte key via
-    sha256(passphrase) — do the same upstream). ``aad_col`` optionally
-    binds each ciphertext to another column (e.g. the clip/run id): the
-    reference's ``associated_data`` — decryption then fails loudly if a
-    ciphertext is replayed onto a different row.
+    sha256(passphrase) — do the same upstream). ``aad_col`` binds each
+    ciphertext to another column (e.g. the clip/run id): the reference's
+    ``associated_data`` — decryption then fails loudly if a ciphertext is
+    replayed onto a different row.
     """
-    aad = F.col(aad_col) if aad_col else F.lit("")
     out = df
     for c in cols:
         out = out.withColumn(
@@ -143,7 +142,7 @@ def encrypt_columns(
                 F.lit("GCM"),
                 F.lit("DEFAULT"),
                 F.lit(b""),  # empty IV literal → random 96-bit IV per value
-                aad.cast("string"),
+                F.col(aad_col).cast("string"),
             ),
         )
     return out
@@ -153,10 +152,11 @@ def decrypt_columns(
     df: DataFrame,
     cols: list[str],
     key: str,
-    aad_col: str | None = None,
+    aad_col: str,
     permissive: bool = False,
 ) -> DataFrame:
-    """Invert :func:`encrypt_columns` (values come back as string).
+    """Invert :func:`encrypt_columns` (values come back as string); the
+    same ``aad_col`` must be given.
 
     ``permissive=True`` uses try_aes_decrypt: wrong-key / tampered / AAD-
     mismatched values decrypt to NULL instead of failing the job — the
@@ -164,7 +164,6 @@ def decrypt_columns(
     InvalidTag behavior (crypto.py:60-72).
     """
     fn = F.try_aes_decrypt if permissive else F.aes_decrypt
-    aad = F.col(aad_col) if aad_col else F.lit("")
     out = df
     for c in cols:
         out = out.withColumn(
@@ -174,7 +173,7 @@ def decrypt_columns(
                 F.lit(key),
                 F.lit("GCM"),
                 F.lit("DEFAULT"),
-                aad.cast("string"),
+                F.col(aad_col).cast("string"),
             ).cast("string"),
         )
     return out

@@ -58,7 +58,7 @@ def _default_driver_mem(meminfo: str = "/proc/meminfo") -> str:
 
 
 def get_session(
-    app_name: str = "baskerville_spark",
+    app_name: str,
     master: str | None = None,
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,

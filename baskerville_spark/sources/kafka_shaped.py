@@ -35,6 +35,8 @@ KAFKA_WIRE_SCHEMA = T.StructType(
         T.StructField("timestamp", T.TimestampType(), False),
     ]
 )
+#: parquet files ``write_kafka_shaped`` writes: two micro-batches of two
+N_FILES = 4
 
 
 def write_kafka_shaped(
@@ -42,21 +44,20 @@ def write_kafka_shaped(
     path: str,
     topic: str,
     value_struct: F.Column,
-    key_col: F.Column | None = None,
-    n_files: int = 8,
+    key_col: F.Column,
 ) -> None:
     """Serialize rows into the Kafka wire shape (value = JSON envelope) as
-    ``n_files`` parquet files, so a maxFilesPerTrigger stream over ``path``
+    ``N_FILES`` parquet files, so a maxFilesPerTrigger stream over ``path``
     replays them across several micro-batches."""
     wire = df.select(
-        (key_col.cast("string").cast("binary") if key_col is not None else F.lit(None).cast("binary")).alias("key"),
+        key_col.cast("string").cast("binary").alias("key"),
         F.to_json(value_struct).cast("binary").alias("value"),
         F.lit(topic).alias("topic"),
         F.spark_partition_id().alias("partition"),
         F.monotonically_increasing_id().alias("offset"),
         F.current_timestamp().alias("timestamp"),
     )
-    wire.repartition(n_files).write.mode("overwrite").parquet(path)
+    wire.repartition(N_FILES).write.mode("overwrite").parquet(path)
 
 
 def read_kafka_shaped_stream(spark: SparkSession, path: str) -> DataFrame:

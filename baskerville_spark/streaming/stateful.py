@@ -89,10 +89,7 @@ def _update(
     )
 
 
-def incremental_group_stats(
-    stream: DataFrame,
-    key_col: str = "key",
-) -> DataFrame:
+def incremental_group_stats(stream: DataFrame, key_col: str) -> DataFrame:
     """Stateful per-key incremental stats over a stream.
 
     Input stream needs columns (key_col, ``value``); output one row per key

@@ -107,7 +107,7 @@ def _timed_suite(spark, clips, tref, baseline, suite: str) -> float:
     if suite == "decode":
         _materialize(inv_mod.audio_invariant(clips, tref))
     else:
-        res = run_validation(spark, clips, tref, baseline, ValidationConfig())
+        res = run_validation(spark, clips, tref, baseline, cfg=ValidationConfig())
         res.verdicts.count()
         res.violations.count()
         res.unpersist()

@@ -134,7 +134,7 @@ def test_audio_spectral_features(spark):
         Row(part_id=0, clip_id="bad", bytes=b"zz", codec="flac"),
     ]
     out = {r["clip_id"]: r for r in
-           audio_spectral_features(spark.createDataFrame(rows), n_fft=n_fft).collect()}
+           audio_spectral_features(spark.createDataFrame(rows)).collect()}
     assert out["tone8"]["dominant_bin"] == 8
     assert abs(out["tone8"]["spectral_centroid"] - 8) < 0.5
     assert out["silent"]["decode_ok"] and out["silent"]["dominant_bin"] is None

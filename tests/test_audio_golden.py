@@ -106,9 +106,13 @@ def edge_outputs(spark) -> dict:
         with mock.patch.object(AQ, "BANDWIDTH_N_FFT", 64):
             return AQ.audio_bandwidth(d)
 
+    def spectral(d):  # a 64-point FFT, as for the bandwidth
+        with mock.patch.object(AQ, "SPECTRAL_N_FFT", 64):
+            return AQ.audio_spectral_features(d)
+
     per_clip = {
         "loudness": AQ.audio_loudness_stats,
-        "spectral": lambda d: AQ.audio_spectral_features(d, n_fft=64),
+        "spectral": spectral,
         "dc_offset": AQ.audio_dc_offset,
         "pitch_period": AQ.audio_pitch_period,
         "bandwidth": bandwidth,

@@ -51,14 +51,14 @@ def test_duplicate_exemplars_bounded_under_skew(spark, monkeypatch):
     # salted branch (the adaptive default would take the cold single-shuffle
     # path at this size — both must agree exactly)
     monkeypatch.setattr(uniqueness, "HOT_THRESHOLD", 10_000)
-    rows = duplicate_exemplars(df, key="clip_id", id_col="row_id", k=5).collect()
+    rows = duplicate_exemplars(df, key="clip_id", id_col="row_id").collect()
     monkeypatch.undo()
     assert len(rows) == 1
     r = rows[0]
     assert r["dup_count"] == 50_000
     assert r["exemplar_ids"] == [0, 1, 2, 3, 4]  # smallest k, exact
     assert len(r["exemplar_ids"]) == 5
-    cold = duplicate_exemplars(df, key="clip_id", id_col="row_id", k=5).collect()
+    cold = duplicate_exemplars(df, key="clip_id", id_col="row_id").collect()
     assert [tuple(x) for x in cold] == [tuple(x) for x in rows]
 
 
@@ -354,9 +354,7 @@ def test_duplicate_exemplars_reports_null_keys(spark, monkeypatch):
         monkeypatch.setattr(uniqueness, "HOT_THRESHOLD", thr)
         rows = {
             r["clip_id"]: r
-            for r in duplicate_exemplars(
-                df, key="clip_id", id_col="row_id", k=5
-            ).collect()
+            for r in duplicate_exemplars(df, key="clip_id", id_col="row_id").collect()
         }
         assert rows[None]["dup_count"] == 3
         assert sorted(rows[None]["exemplar_ids"]) == [1, 2, 3]
@@ -393,13 +391,13 @@ def test_snapshot_diff_statuses(spark):
             Row(part=4, k=9, v="new"),                         # added
         ]
     )
-    d = {r["partition"]: r for r in snapshot_diff(a, b, "part").collect()}
+    d = {r["partition"]: r for r in snapshot_diff(a, b, "part", ["k", "v"]).collect()}
     assert d[0]["status"] == "unchanged"
     assert d[1]["status"] == "changed"
     assert d[2]["status"] == "removed" and d[2]["n_rows_b"] is None
     assert d[3]["status"] == "changed"  # count differs even though xor matches
     assert d[4]["status"] == "added" and d[4]["n_rows_a"] is None
-    assert partitions_to_revalidate(a, b, "part") == [1, 3, 4]
+    assert partitions_to_revalidate(a, b, "part", ["k", "v"]) == [1, 3, 4]
 
 
 def test_manifest_invalidate_partitions(spark, tmp_path):
@@ -443,9 +441,9 @@ def test_suite_values_and_null_semantics(spark):
 
     cons = [
         S.completeness("lang_complete", "lang", max_null_rate=0.0),
-        S.bounds("n_bounds", "n", 50, 500),
+        S.bounds("n_bounds", "n", 50, 500, max_rate=0.0),
         S.pattern("lang_lower", "lang", "^[a-z]{2}$"),
-        S.membership("lang_known", "lang", ["en", "fr", "de"]),
+        S.membership("lang_known", "lang", ["en", "fr", "de"], max_rate=0.0),
         S.predicate("ok_rate", "ok", max_rate=0.5),
         S.mean_between("n_mean", "n", 100.0, 200.0),
         S.approx_distinct_min("k_distinct", "k", 2),
@@ -488,9 +486,9 @@ def test_suite_single_pass_plan(spark):
 
     df = _suite_df(spark)
     cons = [
-        S.completeness("c", "lang"),
-        S.bounds("b", "n", 0, 1000),
-        S.predicate("p", "ok"),
+        S.completeness("c", "lang", max_null_rate=0.0),
+        S.bounds("b", "n", 0, 1000, max_rate=0.0),
+        S.predicate("p", "ok", max_rate=0.0),
         S.mean_between("m", "n", 0, 1000),
         S.approx_distinct_min("d", "k", 1),
     ]
@@ -500,8 +498,9 @@ def test_suite_single_pass_plan(spark):
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert plan.count("Exchange hashpartitioning") == 1, plan[:2000]
     assert plan.count("Scan ") == 1, plan[:2000]
-    # global (ungrouped) form: one SinglePartition exchange, still one scan
-    g = S.run_suite(df, cons)
+    # no grouping columns: the table is one group, one SinglePartition
+    # exchange, still one scan
+    g = S.run_suite(df, cons, group_by=[])
     gplan = g._jdf.queryExecution().executedPlan().toString()
     assert gplan.lower().count("exchange") == 1, gplan[:2000]
     assert g.count() == len(cons)
@@ -513,8 +512,8 @@ def test_suite_duplicate_names_rejected(spark):
     from baskerville_spark.checks import suite as S
 
     with _pytest.raises(ValueError, match="duplicate"):
-        S.run_suite(_suite_df(spark), [S.completeness("x", "lang"),
-                                       S.bounds("x", "n", 0, 1)])
+        S.run_suite(_suite_df(spark), [S.completeness("x", "lang", 0.0),
+                                       S.bounds("x", "n", 0, 1, 0.0)], ["part"])
 
 
 # -- mergeable stats state (checks/stats_state.py) ---------------------------
@@ -893,14 +892,11 @@ def test_completeness_verdict_classes(spark):
     cur = _mk_events(spark, cur_rows)
     out = {
         r["partition"]: r
-        for r in completeness_verdicts(
-            cur, expected, "part", ts_col="ts",
-            count_tolerance=0.5, max_staleness_s=3600,
-        ).collect()
+        for r in completeness_verdicts(cur, expected, "part", "ts").collect()
     }
     assert out[1]["status"] == "missing_partition" and out[1]["n_rows"] == 0
     assert out[2]["status"] == "row_count_low"
-    assert out[3]["status"] == "stale_partition"  # lags 6 h > 1 h bound
+    assert out[3]["status"] == "stale_partition"  # lags 6 h > 3 h bound
     assert out[4]["status"] == "unexpected_partition"
     assert out[4]["expected_rows"] is None
     assert len(out) == 4
@@ -924,10 +920,7 @@ def test_completeness_count_low_precedes_stale_and_ok_is_ok(spark):
     cur = _mk_events(spark, [(1, 0, t0)] + [(2, i, t0) for i in range(3)])
     out = {
         r["partition"]: r
-        for r in completeness_verdicts(
-            cur, expected, "part", ts_col="ts",
-            count_tolerance=0.5, max_staleness_s=3600,
-        ).collect()
+        for r in completeness_verdicts(cur, expected, "part", "ts").collect()
     }
     assert out[1]["status"] == "row_count_low"
     assert out[2]["status"] == "ok" and out[2]["n_rows"] == 3
@@ -954,7 +947,7 @@ def test_row_level_diff_statuses_and_churn_bound(spark):
     )
     out = {
         (r["partition"], r["k"]): r["status"]
-        for r in row_level_diff(a, b, "part", ["k"]).collect()
+        for r in row_level_diff(a, b, "part", ["k"], changed_parts=[1, 2]).collect()
     }
     assert out == {(1, 11): "modified", (2, 20): "removed", (2, 22): "added"}
 
@@ -988,7 +981,7 @@ def test_row_level_diff_composite_key(spark):
     b = spark.createDataFrame(
         [(1, 1, 1, "p"), (1, 1, 2, "Q")], "part int, k1 int, k2 int, s string"
     )
-    out = row_level_diff(a, b, "part", ["k1", "k2"]).collect()
+    out = row_level_diff(a, b, "part", ["k1", "k2"], changed_parts=[1]).collect()
     assert len(out) == 1 and out[0]["k2"] == 2 and out[0]["status"] == "modified"
 
 
@@ -1194,9 +1187,9 @@ def test_suggested_suite_roundtrip_all_pass(spark):
         # 'unique' has no single-pass suite kind; it is left out
         make = {
             "completeness": lambda n, r: S.completeness(n, r["col_name"], r["threshold"]),
-            "bounds": lambda n, r: S.bounds(n, r["col_name"], r["lo"], r["hi"]),
+            "bounds": lambda n, r: S.bounds(n, r["col_name"], r["lo"], r["hi"], 0.0),
             "membership": lambda n, r: S.membership(
-                n, r["col_name"], r["members"].split(",")),
+                n, r["col_name"], r["members"].split(","), 0.0),
         }
         return [
             make[r["kind"]](f"{r['col_name']}_{r['kind']}", r)
@@ -1215,7 +1208,7 @@ def test_suggested_suite_roundtrip_all_pass(spark):
     for df in frames:
         cons = suite_from_suggestions(df)
         assert len(cons) >= (6 if df is frames[0] else 2)
-        verdicts = S.run_suite(df, cons).collect()
+        verdicts = S.run_suite(df, cons, group_by=[]).collect()
         assert len(verdicts) == len(cons)
         assert all(r["passed"] for r in verdicts), verdicts
 
@@ -1296,7 +1289,7 @@ def test_wasserstein_binned_identical_sides_and_clamping(spark):
     rows = [("g", v, s) for v in (-5.0, 1.5, 99.0) for s in (True, False)]
     df = spark.createDataFrame(rows, "grp string, v double, sa boolean")
     r = wasserstein_binned(
-        df, "v", F.col("sa"), ["grp"], lo=0.0, hi=4.0, n_bins=4
+        df, "v", F.col("sa"), ["grp"], lo=0.0, hi=4.0, n_bins=4, threshold=0.1
     ).collect()[0]
     assert (r["n_a"], r["n_b"], r["w1"], r["drift"]) == (3, 3, 0.0, False)
 

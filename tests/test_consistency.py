@@ -6,6 +6,7 @@ from __future__ import annotations
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
+from baskerville_spark.checks import consistency
 from baskerville_spark.checks.consistency import (
     payload_byte_violations,
     speaking_rate_verdicts,
@@ -42,21 +43,23 @@ def test_payload_byte_check(spark):
     ]
 
 
-def test_speaking_rate_check(spark):
+def test_speaking_rate_check(spark, monkeypatch):
     df = _meta_rows(spark)
     # 50 chars / 1.0 s = 50 cps; 4000 chars / 0.333 s = 12012 cps (clip e)
-    v = {r["part_id"]: r for r in
-         speaking_rate_verdicts(df, min_cps=0.5, max_cps=100.0).collect()}
+    monkeypatch.setattr(consistency, "MIN_CPS", 0.5)
+    monkeypatch.setattr(consistency, "MAX_CPS", 100.0)
+    v = {r["part_id"]: r for r in speaking_rate_verdicts(df).collect()}
     assert v[0]["n_rows"] == 3 and v[0]["n_violations"] == 0 and v[0]["passed"]
     assert v[1]["n_rows"] == 1 and v[1]["n_violations"] == 1 and not v[1]["passed"]
 
 
-def test_runner_speaking_rate_default_bound(spark):
-    """``speaking_rate_verdicts`` at its default (0.5, 30) chars/s bound, on
-    rows built by hand (every generated clip is far above it), one partition
-    per case: 12 chars/s passes, 200 and 0.2 chars/s fail, and a NULL
-    transcript or a zero duration is not checkable, so it is neither a row
-    nor a violation."""
+def test_runner_speaking_rate_default_bound(spark, monkeypatch):
+    """``speaking_rate_verdicts`` at a (0.5, 30) chars/s bound, on rows
+    built by hand, one partition per case: 12 chars/s passes, 200 and 0.2
+    chars/s fail, and a NULL transcript or a zero duration is not
+    checkable, so it is neither a row nor a violation."""
+    monkeypatch.setattr(consistency, "MIN_CPS", 0.5)
+    monkeypatch.setattr(consistency, "MAX_CPS", 30.0)
     cases = [  # part_id, dur_ms, transcript
         (0, 1000, "x" * 12),
         (1, 1000, "x" * 200),
@@ -195,14 +198,16 @@ def test_chunk_documents(spark, monkeypatch):
     assert rows[(1, 2)]["chunk_md5"] == want
 
 
-def test_vocab_oov(spark):
+def test_vocab_oov(spark, monkeypatch):
+    from baskerville_spark.functions import text
     from baskerville_spark.functions.text import oov_rate, vocab_top_tokens
 
     df = spark.createDataFrame(
         [Row(doc_id=1, text="a a a b b c"),
          Row(doc_id=2, text="a b x y")]
     )
-    vocab = vocab_top_tokens(df, vocab_size=2)
+    monkeypatch.setattr(text, "VOCAB_SIZE", 2)
+    vocab = vocab_top_tokens(df)
     assert [(r["token"], r["cnt"], r["rank"]) for r in vocab.collect()] == [
         ("a", 4, 1), ("b", 3, 2)
     ]
@@ -250,7 +255,8 @@ def test_pack_sequences_plan_no_global_window(spark):
     assert "hashpartitioning(block" in plan
 
 
-def test_cosine_topk_batched(spark):
+def test_cosine_topk_batched(spark, monkeypatch):
+    from baskerville_spark.functions import similarity
     from baskerville_spark.functions.similarity import cosine_topk_batched
 
     corpus = spark.createDataFrame(
@@ -262,7 +268,8 @@ def test_cosine_topk_batched(spark):
         [Row(vec_id=10, embedding=[1.0, 0.0]),
          Row(vec_id=11, embedding=[0.0, 2.0])]
     )
-    out = cosine_topk_batched(corpus, queries, k=2).collect()
+    monkeypatch.setattr(similarity, "BATCH_TOP_K", 2)
+    out = cosine_topk_batched(corpus, queries).collect()
     got = {(r["query_id"], r["rank"]): (r["id"], round(r["cosine_sim"], 6))
            for r in out}
     assert got[(10, 1)] == (1, 1.0)           # exact match first

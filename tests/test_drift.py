@@ -446,7 +446,7 @@ def test_wasserstein_caches_cell_frame(spark):
     df = spark.createDataFrame(
         [("g", 1.0, True), ("g", 2.0, False)], "grp string, v double, sa boolean"
     )
-    out = wasserstein_binned(df, "v", F.col("sa"), ["grp"], 0.0, 4.0, 4)
+    out = wasserstein_binned(df, "v", F.col("sa"), ["grp"], 0.0, 4.0, 4, 0.1)
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "InMemoryTableScan" in plan
     spark.catalog.clearCache()

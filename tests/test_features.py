@@ -117,7 +117,7 @@ def test_pooled_mean_and_corrected_variance_exact(spark):
     b = [2.0, 3.0, 5.0, 7.0]
     cur, past = _mini_vectors(spark, a, b)
     row = update_feature_vector(
-        cur, past, ["user_id"], SPECS, square_variance=False, round_dp=None
+        cur, past, ["user_id"], SPECS, square_variance=False
     ).collect()[0]
     union = a + b
     assert row["request_total"] == pytest.approx(len(union))
@@ -146,7 +146,7 @@ def test_reference_variance_verbatim(spark):
     b = [2.0, 3.0, 5.0, 7.0]
     cur, past = _mini_vectors(spark, a, b)
     row = update_feature_vector(
-        cur, past, ["user_id"], SPECS, square_variance=True, round_dp=None
+        cur, past, ["user_id"], SPECS, square_variance=True
     ).collect()[0]
     expected = ref_update_variance(
         statistics.variance(b),
@@ -166,7 +166,7 @@ def test_new_key_passes_current_through(spark):
     cur, past = _mini_vectors(spark, [1.0, 2.0, 3.0], [4.0, 5.0])
     past = past.withColumn("user_id", F.lit(99))  # no overlap
     row = update_feature_vector(
-        cur, past, ["user_id"], SPECS, round_dp=None
+        cur, past, ["user_id"], SPECS
     ).where(F.col("user_id") == 1).collect()[0]
     assert row["request_total"] == 3.0
     assert row["mean_value"] == pytest.approx(2.0)
@@ -181,7 +181,7 @@ def test_rate_and_ratio_and_replace(spark):
         UpdateSpec("minutes", "replace", ("minutes_total",)),
     ]
     row = update_feature_vector(
-        cur, past, ["user_id"], specs, round_dp=None
+        cur, past, ["user_id"], specs
     ).collect()[0]
     # rate: (past_total + cur_total) / CURRENT minutes (helpers.py:30-34)
     assert row["rate"] == pytest.approx((3 + 2) / 5.0)
@@ -192,7 +192,7 @@ def test_rate_and_ratio_and_replace(spark):
     # reference quirk, helpers.py:33-34)
     cur0 = cur.withColumn("minutes_total", F.lit(0.0))
     row0 = update_feature_vector(
-        cur0, past, ["user_id"], specs, round_dp=None
+        cur0, past, ["user_id"], specs
     ).collect()[0]
     assert row0["rate"] == 2.0
 

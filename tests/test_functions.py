@@ -6,6 +6,7 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
+from baskerville_spark.functions import dedup
 from baskerville_spark.functions.dedup import (
     exact_duplicates,
     minhash_lsh_pairs,
@@ -41,13 +42,13 @@ def test_exact_duplicates(docs):
 
 
 def test_ngram_jaccard_finds_near_dups(docs):
-    pairs = {(r["id_a"], r["id_b"]) for r in ngram_jaccard_pairs(docs, n=3, threshold=0.5).collect()}
+    pairs = {(r["id_a"], r["id_b"]) for r in ngram_jaccard_pairs(docs).collect()}
     assert (1, 2) in pairs and (1, 4) in pairs and (2, 4) in pairs
     assert not any(3 in p or 5 in p for p in pairs)
 
 
 def test_minhash_lsh_recalls_exact_and_near(docs):
-    pairs = {(r["id_a"], r["id_b"]) for r in minhash_lsh_pairs(docs, n=3, verify_threshold=0.5).collect()}
+    pairs = {(r["id_a"], r["id_b"]) for r in minhash_lsh_pairs(docs).collect()}
     assert (1, 4) in pairs  # identical docs always collide
     assert (1, 2) in pairs  # ~0.8 jaccard: expected with 8 bands of 4
 
@@ -104,13 +105,12 @@ def test_cosine_topk_self_first(spark, monkeypatch):
 def test_lsh_recall_vs_brute_force(spark, monkeypatch):
     monkeypatch.setattr(similarity, "LSH_DIM", 16)
     monkeypatch.setattr(similarity, "LSH_N_PLANES", 8)
+    monkeypatch.setattr(similarity, "BRUTE_FORCE_MIN_COSINE", 0.95)
+    monkeypatch.setattr(similarity, "LSH_MIN_COSINE", 0.95)
     df = _vec_df(spark)
-    exact = {(r["id_a"], r["id_b"]) for r in brute_force_pairs(df, threshold=0.95).collect()}
+    exact = {(r["id_a"], r["id_b"]) for r in brute_force_pairs(df).collect()}
     assert len(exact) >= 8  # the injected near-dup pairs
-    approx = {
-        (r["id_a"], r["id_b"])
-        for r in hyperplane_lsh_pairs(df, n_tables=4, threshold=0.95).collect()
-    }
+    approx = {(r["id_a"], r["id_b"]) for r in hyperplane_lsh_pairs(df).collect()}
     assert approx.issubset(exact | approx)  # verify step keeps only >= threshold
     recall = len(approx & exact) / len(exact)
     assert recall >= 0.75, (recall, exact - approx)
@@ -120,18 +120,20 @@ def test_ivf_topk_matches_brute_force(spark, monkeypatch):
     from baskerville_spark.functions.similarity import ivf_topk, train_ivf_centroids
 
     df = _vec_df(spark, n=120, dim=16)
-    cent = train_ivf_centroids(df, n_centroids=8, sample_mod=2)
+    monkeypatch.setattr(similarity, "IVF_SAMPLE_MOD", 2)
+    cent = train_ivf_centroids(df)
     assert cent.shape == (8, 16)
     q = [float(x) for x in df.where("vec_id = 0").first()["embedding"]]
     monkeypatch.setattr(similarity, "TOP_K", 5)
     exact = [r["id"] for r in cosine_topk(df, q).collect()]
-    approx = [
-        r["id"] for r in ivf_topk(df, q, cent, nprobe=8).collect()
-    ]  # nprobe == n_centroids → exhaustive → must equal exact
+    # probing every cluster is exhaustive → must equal exact
+    monkeypatch.setattr(similarity, "IVF_NPROBE", 8)
+    approx = [r["id"] for r in ivf_topk(df, q, cent).collect()]
     assert approx == exact
     # probing fewer clusters still finds the query vector itself + its twin
     monkeypatch.setattr(similarity, "TOP_K", 2)
-    few = [r["id"] for r in ivf_topk(df, q, cent, nprobe=2).collect()]
+    monkeypatch.setattr(similarity, "IVF_NPROBE", 2)
+    few = [r["id"] for r in ivf_topk(df, q, cent).collect()]
     assert few[0] == 0 and few[1] == 1
 
 
@@ -167,14 +169,17 @@ def test_exact_duplicates_bounded_exemplars(spark):
     assert salted == window and len(salted) == 1
 
 
-def test_ngram_guard_bounds_ubiquitous_shingle(spark):
+def test_ngram_guard_bounds_ubiquitous_shingle(spark, monkeypatch):
     """One shingle shared by every doc must not join the corpus to itself."""
     n = 200
     docs = [(i, f"common shingle here unique{i} tail{i} words{i}") for i in range(n)]
     df = spark.createDataFrame(docs, "doc_id int, text string")
     # every doc contains the 3-gram 'common shingle here' (df = 200)
-    unguarded = ngram_jaccard_pairs(df, n=3, threshold=0.0, max_df=1 << 30).count()
-    guarded = ngram_jaccard_pairs(df, n=3, threshold=0.0, max_df=50).count()
+    monkeypatch.setattr(dedup, "JACCARD_THRESHOLD", 0.0)
+    monkeypatch.setattr(dedup, "JACCARD_MAX_DF", 1 << 30)
+    unguarded = ngram_jaccard_pairs(df).count()
+    monkeypatch.setattr(dedup, "JACCARD_MAX_DF", 50)
+    guarded = ngram_jaccard_pairs(df).count()
     assert unguarded == n * (n - 1) // 2  # quadratic without the guard
     assert guarded == 0  # stop-shingle filter removes the only shared shingle
 
@@ -182,7 +187,7 @@ def test_ngram_guard_bounds_ubiquitous_shingle(spark):
 def test_minhash_verify_is_candidates_only(docs):
     """The exact-Jaccard verify must key on LSH candidates (left-semi join),
     not recompute the full-corpus pair join."""
-    plan = minhash_lsh_pairs(docs, n=3, verify_threshold=0.5)._jdf.queryExecution().toString()
+    plan = minhash_lsh_pairs(docs)._jdf.queryExecution().toString()
     assert "LeftSemi" in plan
 
 
@@ -201,19 +206,10 @@ def test_simhash_near_dups_planted(spark):
     assert pairs[(1, 3)] == 0
     assert (1, 2) in pairs and pairs[(1, 2)] <= 3
     assert not any(4 in p for p in pairs)
-
-    # the SQL-portable md5 hasher (60-bit; what the q20/q35 oracles check)
-    # must find the same planted structure as the xxhash64 production hasher
-    md5_pairs = {
-        (r["id_a"], r["id_b"]): r["hamming"]
-        for r in simhash_near_dups(df, hasher="md5").collect()
-    }
-    assert md5_pairs[(1, 3)] == 0
-    assert (1, 2) in md5_pairs and md5_pairs[(1, 2)] <= 3
-    assert not any(4 in p for p in md5_pairs)
-    # md5 fingerprints are 60-bit: always non-negative (BIGINT-safe in both
-    # Spark and DuckDB — the property the oracle's value hash relies on)
-    for r in simhash(df, hasher="md5").collect():
+    # md5 is the only token hasher: its fingerprints are 60-bit, always
+    # non-negative (BIGINT-safe in both Spark and DuckDB — the property the
+    # q20/q35 oracles' value hash relies on)
+    for r in simhash(df).collect():
         assert 0 <= r["simhash"] < 2**60
 
 
@@ -278,11 +274,11 @@ def test_video_frame_sampling(spark):
         ],
         "item_id string, payload binary, fmt string",
     )
-    rows = sample_frames(df, every_k=10).collect()
+    rows = sample_frames(df).collect()
     v1 = sorted(
         (r["frame_idx"], r["mean_luma"]) for r in rows if r["item_id"] == "v1"
     )
-    assert v1 == [(0, 0.0), (10, 100.0), (20, 200.0)]  # every 10th frame
+    assert v1 == [(0, 0.0), (5, 50.0), (10, 100.0), (15, 150.0), (20, 200.0)]  # every 5th
     v2 = [r for r in rows if r["item_id"] == "v2"]
     assert len(v2) == 1 and not v2[0]["decode_ok"]  # mp4 honestly stubbed
 
@@ -333,7 +329,7 @@ def test_similarity_null_and_ragged_guards(spark, monkeypatch):
     df = spark.createDataFrame(rows, "vec_id int, embedding array<float>")
     monkeypatch.setattr(similarity, "LSH_DIM", 4)
     monkeypatch.setattr(similarity, "LSH_N_PLANES", 4)
-    pairs = hyperplane_lsh_pairs(df, n_tables=2, threshold=0.9)
+    pairs = hyperplane_lsh_pairs(df)
     got = {(r["id_a"], r["id_b"]) for r in pairs.collect()}
     assert got == {(0, 1)}  # null row contributed no buckets, no crash
 
@@ -348,8 +344,8 @@ def test_similarity_null_and_ragged_guards(spark, monkeypatch):
         )
         ivf_assign(ragged, cent).collect()
 
-    with pytest.raises(ValueError, match="n_centroids"):
-        train_ivf_centroids(df, n_centroids=8, sample_mod=1)
+    with pytest.raises(ValueError, match="IVF_N_CENTROIDS"):
+        train_ivf_centroids(df)
 
 
 def test_ivf_probe_prunes_clusters(spark):
@@ -371,12 +367,12 @@ def test_ivf_probe_prunes_clusters(spark):
         rows.append((i, [float(x) for x in v]))
     df = spark.createDataFrame(rows, "vec_id int, embedding array<float>")
 
-    # sample_mod coprime with k_clusters: an even mod would sample only the
-    # even combs and leave half the clusters unseeded
-    cent = train_ivf_centroids(df, n_centroids=8, sample_mod=3)
+    # IVF_SAMPLE_MOD = 3 is coprime with k_clusters: an even mod would
+    # sample only the even combs and leave half the clusters unseeded
+    cent = train_ivf_centroids(df)
     q = [float(x) for x in rows[0][1]]
     exact = [r["id"] for r in cosine_topk(df, q).collect()]
-    appr = [r["id"] for r in ivf_topk(df, q, cent, nprobe=2).collect()]
+    appr = [r["id"] for r in ivf_topk(df, q, cent).collect()]
     assert appr == exact  # recall 1.0 at low nprobe
 
     # selectivity: the probed clusters hold <= 30% of the corpus
@@ -386,7 +382,7 @@ def test_ivf_probe_prunes_clusters(spark):
     assert probed_rows / n <= 0.30, probed_rows
 
 
-def test_ivf_training_sample_hard_cap(spark):
+def test_ivf_training_sample_hard_cap(spark, monkeypatch):
     """The quantizer's driver-side sample is HARD-bounded by max_train_rows
     no matter how large the corpus or how loose sample_mod is — the uncapped
     id%mod filter this replaces collected a fixed corpus fraction."""
@@ -411,7 +407,9 @@ def test_ivf_training_sample_hard_cap(spark):
         map(tuple, (r[0] for r in b.collect()))
     )
     # end-to-end: training under the cap still yields the requested shape
-    cent = train_ivf_centroids(df, n_centroids=4, sample_mod=2)
+    monkeypatch.setattr(similarity, "IVF_N_CENTROIDS", 4)
+    monkeypatch.setattr(similarity, "IVF_SAMPLE_MOD", 2)
+    cent = train_ivf_centroids(df)
     assert cent.shape == (4, 2)
 
 
@@ -476,7 +474,7 @@ def test_audio_codec_seam_contract(monkeypatch):
     assert out is not None and np.array_equal(out, pcm)
 
 
-def test_tfidf_cosine_pairs(spark):
+def test_tfidf_cosine_pairs(spark, monkeypatch):
     from baskerville_spark.functions.dedup import tfidf_cosine_pairs
     import math
 
@@ -490,7 +488,8 @@ def test_tfidf_cosine_pairs(spark):
         ],
         ["doc_id", "text"],
     )
-    rows = tfidf_cosine_pairs(docs, threshold=0.0, max_df=2).collect()
+    monkeypatch.setattr(dedup, "TFIDF_MAX_DF", 2)
+    rows = tfidf_cosine_pairs(docs).collect()
     got = {(r["id_a"], r["id_b"]): r["cosine"] for r in rows}
     assert set(got) == {(1, 2)}  # doc 3 shares only the filtered stop word
     # hand computation over the filtered space: shared terms df=2 weight
@@ -499,7 +498,8 @@ def test_tfidf_cosine_pairs(spark):
     expected = (2 * w2 * w2) / (2 * w2 * w2 + w1 * w1)
     assert abs(got[(1, 2)] - expected) < 1e-9
     # threshold filters
-    assert tfidf_cosine_pairs(docs, threshold=0.99, max_df=2).count() == 0
+    monkeypatch.setattr(dedup, "TFIDF_MIN_COSINE", 0.99)
+    assert tfidf_cosine_pairs(docs).count() == 0
 
 
 def test_containment_catches_excerpts_jaccard_misses(spark):
@@ -527,7 +527,7 @@ def test_containment_catches_excerpts_jaccard_misses(spark):
     assert cont[(1, 2)][1] == 1.0  # containment of the excerpt (b) in a
     assert cont[(1, 2)][0] < 0.8   # the big doc is NOT contained in the excerpt
     # the same pair sails under a Jaccard gate — the class this metric exists for
-    assert ngram_jaccard_pairs(docs, n=3, threshold=0.8).count() == 0
+    assert ngram_jaccard_pairs(docs).count() == 0
 
 
 def test_repetition_metrics(spark):
@@ -605,9 +605,7 @@ def test_bloom_semi_join_equals_exact(spark):
         F.col("id").alias("rowid"), (F.col("id") % 700).alias("k")
     )
     dim = spark.range(120).select((F.col("id") * 3).alias("dk"))  # 0,3,..357
-    got = bloom_semi_join(
-        fact, dim, fact_key="k", dim_key="dk", m_bits=1 << 14
-    )
+    got = bloom_semi_join(fact, dim, fact_key="k", dim_key="dk")
     expect = fact.join(
         dim.select(F.col("dk").alias("k")), "k", "left_semi"
     )
@@ -778,7 +776,7 @@ def test_z_value_bit_interleave(spark):
     )
     out = {
         (r.x, r.y): r.z
-        for r in df.select("x", "y", z_value(F.col("x"), F.col("y"), bits=8).alias("z")).collect()
+        for r in df.select("x", "y", z_value(F.col("x"), F.col("y")).alias("z")).collect()
     }
     def interleave(x, y):
         return sum(((x >> i) & 1) << (2 * i) | ((y >> i) & 1) << (2 * i + 1)
@@ -841,12 +839,13 @@ def test_keep_canonical_string_ids(spark):
     assert sorted(r.doc_id for r in survivors.collect()) == ["clip_a", "clip_c"]
 
 
-def test_gap_fill(spark):
+def test_gap_fill(spark, monkeypatch):
     """Forward fill without a calendar join: span emission, max_fill cap,
     latest-in-slot collapse, and the single-exchange plan."""
     from pyspark.sql import Row
     from pyspark.sql import functions as F
 
+    from baskerville_spark.functions import timegrid
     from baskerville_spark.functions.timegrid import gap_fill
 
     rows = [
@@ -874,8 +873,8 @@ def test_gap_fill(spark):
 
     # max_fill bounds amplification: gap of 3 missing slots, cap at 1 —
     # slots 20,30 stay ABSENT (downstream reads "no data", never a join)
-    capped = gap_fill(df, ["k"], "slot", ["v"], step=10, order_col="oid",
-                      max_fill=1)
+    monkeypatch.setattr(timegrid, "MAX_FILL", 1)
+    capped = gap_fill(df, ["k"], "slot", ["v"], step=10, order_col="oid")
     slots_a = sorted(
         r["grid_slot"] for r in capped.where(F.col("k") == "a").collect()
     )

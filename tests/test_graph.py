@@ -25,6 +25,12 @@ def _labels(df) -> dict[int, int]:
     return {r["id"]: r["cluster_id"] for r in df.collect()}
 
 
+def _unseeded(verts, edges):
+    """``connected_components`` from identity seeds: every vertex starts at
+    its own id."""
+    return connected_components(verts, edges, verts.select("id", F.col("id").alias("label")))
+
+
 def test_path_graph_needs_multiple_rounds(spark, monkeypatch):
     # Path 9-7-5-3-1 with the min at the far end: label 1 must walk the
     # path hop by hop, so convergence takes >1 round — the regime the
@@ -35,10 +41,10 @@ def test_path_graph_needs_multiple_rounds(spark, monkeypatch):
     )
     # exactly 4 hops of propagation + 1 confirming round
     monkeypatch.setattr(graph, "LABEL_MAX_ITERS", 5)
-    assert _labels(connected_components(verts, edges)) == {1: 1, 3: 1, 5: 1, 7: 1, 9: 1}
+    assert _labels(_unseeded(verts, edges)) == {1: 1, 3: 1, 5: 1, 7: 1, 9: 1}
     monkeypatch.setattr(graph, "LABEL_MAX_ITERS", 4)
     with pytest.raises(RuntimeError, match="did not converge in 4 rounds"):
-        connected_components(verts, edges)
+        _unseeded(verts, edges)
 
 
 def test_two_components_and_isolated_vertex(spark):
@@ -46,7 +52,7 @@ def test_two_components_and_isolated_vertex(spark):
     edges = spark.createDataFrame(
         [(2, 4), (4, 6), (1, 3), (3, 5)], ["src", "dst"]
     )
-    got = _labels(connected_components(verts, edges))
+    got = _labels(_unseeded(verts, edges))
     assert got == {1: 1, 3: 1, 5: 1, 2: 2, 4: 2, 6: 2, 7: 7}
 
 
@@ -58,14 +64,14 @@ def test_star_edges_match_clique_connectivity(spark):
         ["id", "bucket"],
     )
     verts = membership.select("id").distinct()
-    stars = star_edges(membership)
+    stars = star_edges(membership, "id")
     # star edge count is linear: (3-1) + (2-1) + 0 singleton
     assert stars.count() == 3
     cliques = spark.createDataFrame(
         [(1, 5), (1, 9), (5, 9), (9, 12)], ["src", "dst"]
     )
-    assert _labels(connected_components(verts, stars)) == _labels(
-        connected_components(verts, cliques)
+    assert _labels(_unseeded(verts, stars)) == _labels(
+        _unseeded(verts, cliques)
     )
 
 
@@ -76,7 +82,7 @@ def test_nonconvergence_raises(spark, monkeypatch):
     )
     monkeypatch.setattr(graph, "LABEL_MAX_ITERS", 2)
     with pytest.raises(RuntimeError, match="did not converge"):
-        connected_components(verts, edges)
+        _unseeded(verts, edges)
 
 
 def test_bigstar_long_chain_converges_sublinearly(spark, monkeypatch):
@@ -96,7 +102,7 @@ def test_bigstar_long_chain_converges_sublinearly(spark, monkeypatch):
 
     monkeypatch.setattr(graph, "LABEL_MAX_ITERS", 10)
     with pytest.raises(RuntimeError, match="did not converge"):
-        connected_components(verts, edges)
+        _unseeded(verts, edges)
 
 
 def test_bigstar_matches_label_on_mixed_graph(spark):
@@ -107,7 +113,7 @@ def test_bigstar_matches_label_on_mixed_graph(spark):
     edges = spark.createDataFrame(
         [(9, 7), (7, 5), (2, 4), (4, 6), (6, 8), (8, 1)], ["src", "dst"]
     )
-    a = _labels(connected_components(verts, edges))
+    a = _labels(_unseeded(verts, edges))
     b = _labels(connected_components_bigstar(verts, edges))
     assert a == b
     assert b[9] == 5 and b[2] == 1 and b[3] == 3
@@ -123,8 +129,8 @@ def test_seeded_labels_halve_rounds_same_answer(spark, monkeypatch):
         ["id", "bucket"],
     )
     verts = membership.select("id").distinct()
-    edges = star_edges(membership)
-    plain = connected_components(verts, edges)
+    edges = star_edges(membership, "id")
+    plain = _unseeded(verts, edges)
     roots = membership.groupBy("bucket").agg(F.min("id").alias("__root"))
     seeds = (
         membership.join(roots, "bucket")
@@ -138,7 +144,7 @@ def test_seeded_labels_halve_rounds_same_answer(spark, monkeypatch):
     monkeypatch.setattr(graph, "LABEL_MAX_ITERS", 3)
     assert _labels(connected_components(verts, edges, init_labels=seeds)) == _labels(plain)
     with pytest.raises(RuntimeError, match="did not converge"):
-        connected_components(verts, edges)
+        _unseeded(verts, edges)
 
 
 def test_dedup_clusters_bigstar_dispatch(spark):
@@ -181,7 +187,7 @@ def test_star_edges_plan_is_partial_agg_no_window(spark):
     membership = spark.createDataFrame(
         [(1, "a"), (5, "a"), (9, "b")], ["id", "bucket"]
     )
-    plan = star_edges(membership)._jdf.queryExecution().executedPlan().toString()
+    plan = star_edges(membership, "id")._jdf.queryExecution().executedPlan().toString()
     assert "Window" not in plan
     assert "partial_min" in plan  # map-side partial aggregation of the root
 
@@ -204,7 +210,7 @@ def test_reliable_checkpoint_used_when_dir_configured(spark, tmp_path):
         edges = spark.createDataFrame(
             [(9, 7), (7, 5), (5, 3), (3, 1)], ["src", "dst"]
         )
-        got = _labels(connected_components(verts, edges))
+        got = _labels(_unseeded(verts, edges))
         assert got == {1: 1, 3: 1, 5: 1, 7: 1, 9: 1}
         rdd_dirs = [
             os.path.join(d, f)
@@ -241,7 +247,7 @@ def test_incremental_clustering_equals_from_scratch(spark):
     prior = dedup_clusters(b1).select("id", "cluster_id")
     full_membership = b1.unionByName(b2)
 
-    inc_m = incremental_membership(b2, prior, retained_index=full_membership)
+    inc_m = incremental_membership(b2, prior, retained_index=full_membership, id_col="id")
     incremental = dedup_clusters(inc_m)
     scratch = dedup_clusters(full_membership)
     inc = {r["id"]: (r["cluster_id"], r["cluster_size"]) for r in incremental.collect()}
@@ -251,7 +257,7 @@ def test_incremental_clustering_equals_from_scratch(spark):
 
     # the naive two-term union (no bridge) silently misses both merges —
     # the exact failure mode the bridge term exists to prevent
-    naive = dedup_clusters(b2.unionByName(prior_label_membership(prior)))
+    naive = dedup_clusters(b2.unionByName(prior_label_membership(prior, "id")))
     nv = {r["id"]: r["cluster_id"] for r in naive.collect()}
     assert nv[20] == 20 and nv[21] == 21  # stranded singletons
 
@@ -260,6 +266,6 @@ def test_string_ids_raise_loudly(spark):
     verts = spark.createDataFrame([("a",), ("b",)], ["id"])
     edges = spark.createDataFrame([("a", "b")], ["src", "dst"])
     with pytest.raises(ValueError, match="xxhash64"):
-        connected_components(verts, edges)
+        _unseeded(verts, edges)
     with pytest.raises(ValueError, match="xxhash64"):
         connected_components_bigstar(verts, edges)

@@ -29,7 +29,7 @@ def _fixture(spark, n=2000):
 
 def test_iforest_separates_planted_outliers(spark):
     df = _fixture(spark)
-    forest = train_iforest(df, "id", ["f1", "f2"], n_trees=50, seed=7)
+    forest = train_iforest(df, "id", ["f1", "f2"])
     planted = {r["id"] for r in df.where("id % 400 = 7").select("id").collect()}
     top = top_anomalies(df, forest, "id", ["f1", "f2"], k=len(planted))
     assert {r["id"] for r in top.collect()} == planted  # recall 1.0, no FPs
@@ -37,13 +37,13 @@ def test_iforest_separates_planted_outliers(spark):
 
 def test_iforest_deterministic_and_partition_invariant(spark):
     df = _fixture(spark, 1000)
-    forest = train_iforest(df, "id", ["f1", "f2"], n_trees=20, seed=3)
+    forest = train_iforest(df, "id", ["f1", "f2"])
     a = {r["id"]: r["anomaly_score"]
          for r in score_anomalies(df, forest, "id", ["f1", "f2"]).collect()}
     b = {r["id"]: r["anomaly_score"]
          for r in score_anomalies(df.repartition(13), forest, "id", ["f1", "f2"]).collect()}
     assert a == b  # scoring is pure per-row: partitioning cannot change it
-    forest2 = train_iforest(df, "id", ["f1", "f2"], n_trees=20, seed=3)
+    forest2 = train_iforest(df, "id", ["f1", "f2"])
     c = {r["id"]: r["anomaly_score"]
          for r in score_anomalies(df, forest2, "id", ["f1", "f2"]).collect()}
     assert a == c  # training is seeded + sample-deterministic
@@ -62,7 +62,7 @@ def test_iforest_null_features_score_null(spark):
         [(1, 0.1, 0.2), (2, None, 0.3), (3, 0.2, 0.1)],
         "id long, f1 double, f2 double",
     )
-    forest = train_iforest(df.where("f1 IS NOT NULL"), "id", ["f1", "f2"], n_trees=10)
+    forest = train_iforest(df.where("f1 IS NOT NULL"), "id", ["f1", "f2"])
     got = {r["id"]: r["anomaly_score"]
            for r in score_anomalies(df, forest, "id", ["f1", "f2"]).collect()}
     assert got[2] is None or np.isnan(got[2])
@@ -86,7 +86,7 @@ def test_gbm_learns_separable_rule(spark):
     from baskerville_spark.ml.gbm import predict_label, train_gbm
 
     df = _labeled_fixture(spark)
-    model = train_gbm(df, "id", ["f1", "f2"], "label", n_rounds=30)
+    model = train_gbm(df, "id", ["f1", "f2"], "label")
     pred = {r["id"]: r["predicted"]
             for r in predict_label(df, model, "id", ["f1", "f2"]).collect()}
     truth = {r["id"]: int(r["label"]) for r in df.collect()}
@@ -97,8 +97,8 @@ def test_gbm_deterministic_and_partition_invariant(spark):
     from baskerville_spark.ml.gbm import predict_proba, train_gbm
 
     df = _labeled_fixture(spark, 800)
-    m1 = train_gbm(df, "id", ["f1", "f2"], "label", n_rounds=15)
-    m2 = train_gbm(df.repartition(7), "id", ["f1", "f2"], "label", n_rounds=15)
+    m1 = train_gbm(df, "id", ["f1", "f2"], "label")
+    m2 = train_gbm(df.repartition(7), "id", ["f1", "f2"], "label")
     a = {r["id"]: r["probability"]
          for r in predict_proba(df, m1, "id", ["f1", "f2"]).collect()}
     b = {r["id"]: r["probability"]

@@ -30,10 +30,14 @@ def test_bmp_roundtrip_property(w, h, rgb):
 )
 @settings(max_examples=5, deadline=None)
 def test_jaccard_pair_invariants(spark, texts):
+    from unittest import mock
+
+    from baskerville_spark.functions import dedup
     from baskerville_spark.functions.dedup import ngram_jaccard_pairs
     docs = [(i, t) for i, t in enumerate(texts)] + [(100, texts[0]), (101, texts[0])]
     df = spark.createDataFrame(docs, "doc_id int, text string")
-    rows = ngram_jaccard_pairs(df, n=2, threshold=0.0, max_df=1 << 30).collect()
+    with mock.patch.multiple(dedup, SHINGLE_N=2, JACCARD_THRESHOLD=0.0, JACCARD_MAX_DF=1 << 30):
+        rows = ngram_jaccard_pairs(df).collect()
     for r in rows:
         assert r["id_a"] < r["id_b"]                      # canonical ordering
         assert 0.0 < r["jaccard"] <= 1.0 + 1e-12          # bounded metric
@@ -121,7 +125,7 @@ def test_pooled_merge_equals_recompute_property(spark, vals, cut):
         UpdateSpec("min_value", "minimum", ("min_value",)),
     ]
     row = update_feature_vector(
-        cur, past, ["user_id"], specs, square_variance=False, round_dp=None
+        cur, past, ["user_id"], specs, square_variance=False
     ).collect()[0]
     union = a + b
     scale = max(abs(statistics.variance(union)), 1.0)
@@ -179,11 +183,12 @@ def test_connected_components_match_union_find(spark, edges, data):
     e = spark.createDataFrame(
         [(a, b) for a, b in edges] or [(0, 0)], ["src", "dst"]
     )
+    seeds = verts.select("id", verts["id"].alias("label"))  # identity: unseeded
     # a random path can outlast the default round cap; raise it here
     with mock.patch.object(graph, "LABEL_MAX_ITERS", 40):
         got_label = {
             r["id"]: r["cluster_id"]
-            for r in connected_components(verts, e).collect()
+            for r in connected_components(verts, e, seeds).collect()
         }
     got_star = {
         r["id"]: r["cluster_id"]
@@ -219,7 +224,7 @@ def test_incremental_clustering_theorem(spark, rows, split_mod):
     b2 = membership.where(f"id % {split_mod} = 0")
     prior = dedup_clusters(b1).select("id", "cluster_id")
     inc = dedup_clusters(
-        incremental_membership(b2, prior, retained_index=membership)
+        incremental_membership(b2, prior, retained_index=membership, id_col="id")
     )
     scratch = dedup_clusters(membership)
     to_map = lambda df: {  # noqa: E731
@@ -332,10 +337,11 @@ def test_fixture_mod_classes_disjoint_for_gate_shapes():
 def test_gap_fill_matches_pandas_reference(spark, obs):
     """Property: gap_fill == the pandas reindex+ffill textbook form, for
     any observation multiset (per-key grids, latest-in-slot collapse,
-    forward-carried values, is_observed marking)."""
+    forward-carried values capped at MAX_FILL slots per gap, is_observed
+    marking)."""
     import pandas as pd
 
-    from baskerville_spark.functions.timegrid import gap_fill
+    from baskerville_spark.functions.timegrid import MAX_FILL, gap_fill
 
     step = 10
     rows = [
@@ -351,11 +357,12 @@ def test_gap_fill_matches_pandas_reference(spark, obs):
     pdf = pd.DataFrame(rows)
     expect = {}
     for k, g in pdf.groupby("k"):
-        # latest oid wins per slot, then reindex to the full grid + ffill
+        # latest oid wins per slot, then reindex to the full grid + ffill;
+        # slots past the fill cap stay absent
         g = g.sort_values("oid").drop_duplicates("slot", keep="last")
         g = g.set_index("slot").sort_index()
         grid = range(int(g.index.min()), int(g.index.max()) + step, step)
-        filled = g["v"].reindex(grid).ffill()
+        filled = g["v"].reindex(grid).ffill(limit=MAX_FILL).dropna()
         for slot, v in filled.items():
             expect[(k, slot)] = (float(v), slot in g.index)
     assert got == expect

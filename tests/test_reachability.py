@@ -1,6 +1,6 @@
 """Every top-level def, class and module constant in ``baskerville_spark/``
 has a production caller, and every defaulted parameter of a public one is
-set by a production call.
+set by a production call and left at its default by another.
 
 The roots are the entry points: the CLI (``baskerville_spark/main.py``), the
 gate table and driver API of ``__spark_entry__.py``, ``bench.py``,
@@ -15,15 +15,23 @@ with its tests.
 The walk over-approximates: a name bound by several imports in one module
 reaches all of them, and reaching a class reaches all of its methods.
 
-The parameter walk matches calls by callee name only: a defaulted parameter
+The parameter walk matches calls by callee name only. A defaulted parameter
 of a public function, public method or ``__init__`` (called by its class's
-name) counts as set when some call to that name in the package or a root
-file passes it, by keyword or by position, a value other than its default:
-a literal that differs in value or type (``ast.literal_eval``; ``3`` is not
-``3.0``, ``1`` is not ``True``), any non-literal expression,
-or ``*args``/``**kwargs``. A call passing the default itself sets nothing.
-A parameter only tests set is a constant (or a module constant the test
-monkeypatches) unless ``ALLOWED_PARAMS`` names it with its reason.
+name) is live when two calls to that name in the package or a root file
+disagree about it:
+
+- some call sets it: passes it, by keyword or by position, a literal that
+  differs from the default in value or type (``ast.literal_eval``; ``3`` is
+  not ``3.0``, ``1`` is not ``True``), any non-literal expression, or
+  ``*args``/``**kwargs``;
+- some call relies on the default: omits it, passes the default literal
+  itself, or passes ``*args``/``**kwargs``.
+
+A parameter no call sets is a knob with one value: a constant in the body,
+or a module constant a test monkeypatches when it needs another value. A
+parameter every call sets is an input the caller owns: it loses its
+default and becomes required. Either way the branches only the other
+values reached go. ``ALLOWED_PARAMS`` names each exception with its reason.
 """
 
 import ast
@@ -38,7 +46,8 @@ ALLOWED = {
     # The exposition form the validation-path trace spine is to publish.
     ("baskerville_spark.runtime.metrics", "render_prometheus"),
 }
-# Defaulted parameters no production call sets, each with its reason.
+# Defaulted parameters that production calls do not both set and leave at
+# the default, each with its reason.
 ALLOWED_PARAMS = {
     ("baskerville_spark.main", "main", "argv"):
         "test seam: the CLI tests pass the argument list instead of sys.argv",
@@ -270,26 +279,29 @@ def _calls(trees):
     return seen
 
 
-def _sets(call, param, pos, default):
-    """Whether one call passes ``param`` a value other than its default: a
-    literal of another value or type, any other expression, or
-    ``*args``/``**kwargs``."""
+def _passes(call, param, pos, default):
+    """What one call passes ``param``: ``"star"`` for ``*args``/``**kwargs``,
+    ``"default"`` when it omits the parameter or passes the default literal,
+    ``"other"`` for a literal of another value or type or any other
+    expression."""
     args, kw, star = call
     if star:
-        return True
+        return "star"
     arg = kw.get(param)
     if arg is None and pos is not None and pos < len(args):
         arg = args[pos]
     if arg is None:
-        return False
+        return "default"
     value, dflt = _literal(arg), _literal(default)
-    return value is _NOT_LITERAL or dflt is _NOT_LITERAL or type(value) is not type(dflt) or value != dflt
+    if value is _NOT_LITERAL or dflt is _NOT_LITERAL or type(value) is not type(dflt) or value != dflt:
+        return "other"
+    return "default"
 
 
-def unset_parameters(modules=None):
+def dead_defaults(modules=None):
     """Sorted ``(module, qualname, parameter)`` of every defaulted public
-    parameter in the package that no production call sets to a value other
-    than its default."""
+    parameter in the package that no production call sets to another value,
+    or whose default no production call relies on."""
     modules = _load() if modules is None else modules
     trees = [m.tree for m in modules.values()]  # the package and the root files
     calls = _calls(trees)
@@ -298,7 +310,8 @@ def unset_parameters(modules=None):
         if name.split(".")[0] != PKG:
             continue
         for qual, call, param, pos, default in _defaulted_params(m.tree):
-            if any(_sets(c, param, pos, default) for c in calls.get(call, ())):
+            seen = {_passes(c, param, pos, default) for c in calls.get(call, ())}
+            if "star" in seen or seen == {"default", "other"}:
                 continue
             if (name, qual, param) not in ALLOWED_PARAMS:
                 out.append((name, qual, param))
@@ -306,16 +319,18 @@ def unset_parameters(modules=None):
 
 
 def test_every_defaulted_parameter_is_set_by_a_production_call():
-    missing = unset_parameters()
-    assert not missing, (
-        "defaulted parameters no production call sets to another value (make them constants):\n"
-        + "\n".join(f"  {m}.{q}({p})" for m, q, p in missing)
+    dead = dead_defaults()
+    assert not dead, (
+        "defaulted parameters production calls never set, or always set (make the first"
+        " constants, the second required):\n"
+        + "\n".join(f"  {m}.{q}({p})" for m, q, p in dead)
     )
 
 
 def test_parameter_guard_compares_values():
-    """A parameter whose only calls pass its own default is unset; one
-    that gets a different literal, a name or ``**kw`` is set."""
+    """A parameter whose only calls pass its own default is unset, one that
+    every call passes another value has a dead default; one call leaving
+    the default and another setting it, or a ``**kw`` call, keep it."""
     src = '''
 def op(df, a=1, b="x", c=2.0, d=None, e=True):
     return df
@@ -323,15 +338,28 @@ def op(df, a=1, b="x", c=2.0, d=None, e=True):
 def kw_only(df, *, f=3):
     return df
 
+def one_value(df, g=1):
+    return df
+
+def two_values(df, h=1):
+    return df
+
 def run(df, kw, y):
     op(df, a=1, b="x")
     op(df, 1, "x", c=2.5)
     op(df, d=y, e=True)
     kw_only(df, **kw)
+    one_value(df, g=5)
+    one_value(df, 5)
+    two_values(df, h=2)
+    two_values(df, 3)
 '''
     mod = f"{PKG}.synthetic"
-    got = unset_parameters({mod: SimpleNamespace(tree=ast.parse(src))})
-    assert got == [(mod, "op", "a"), (mod, "op", "b"), (mod, "op", "e")]
+    got = dead_defaults({mod: SimpleNamespace(tree=ast.parse(src))})
+    assert got == [
+        (mod, "one_value", "g"), (mod, "op", "a"), (mod, "op", "b"),
+        (mod, "op", "e"), (mod, "two_values", "h"),
+    ]
 
 
 def test_no_tracked_source_hardcodes_the_checkout_path():

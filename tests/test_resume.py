@@ -100,7 +100,7 @@ def test_sink_contract(spark, tmp_path):
 
     clips_p, tref_p, man_p, out_p = _paths(tmp_path)
     write_clips(spark, clips_p, CFG)
-    assert run_resumable(spark, clips_p, man_p, out_p) == [0, 1, 2, 3]
+    assert run_resumable(spark, clips_p, man_p, out_p, cfg=ValidationConfig()) == [0, 1, 2, 3]
 
     for sink in ("violations", "stats", "verdicts"):
         part_dirs = glob.glob(f"{out_p}/{sink}/part_id=*")
@@ -130,7 +130,7 @@ def test_verdict_plan_schema_and_no_python_rdd(spark, tmp_path):
 
     clips_p = str(tmp_path / "clips")
     write_clips(spark, clips_p, CFG)
-    res = run_validation(spark, spark.read.parquet(clips_p))
+    res = run_validation(spark, spark.read.parquet(clips_p), cfg=ValidationConfig())
     assert [
         (f.name, f.dataType.simpleString(), f.nullable)
         for f in res.verdicts.schema.fields
@@ -338,4 +338,4 @@ def test_null_part_id_raises_named_error(spark, tmp_path):
     df.unionByName(null_part).write.partitionBy("part_id").parquet(clips_p)
     man_p, out_p = str(tmp_path / "man"), str(tmp_path / "out")
     with pytest.raises(ValueError, match="NULL part_id.*__HIVE_DEFAULT_PARTITION__"):
-        run_resumable(spark, clips_p, man_p, out_p)
+        run_resumable(spark, clips_p, man_p, out_p, cfg=ValidationConfig())

@@ -43,7 +43,7 @@ CASES = [
                         "extra_suite": (suite.completeness("dur_ok", "dur_ms", 0.01),)},
      True, True),
     ("all", {"emit_states": True,
-             "extra_suite": (suite.bounds("sr_ok", "sr_hz", 8000, 44100),)},
+             "extra_suite": (suite.bounds("sr_ok", "sr_hz", 8000, 44100, 0.0),)},
      True, True),
 ]
 
@@ -76,7 +76,7 @@ def runner_outputs(spark) -> dict:
         for label, kw, with_tref, with_base in CASES:
             res = run_validation(
                 spark, clips, tref if with_tref else None,
-                baseline if with_base else None, ValidationConfig(**kw),
+                baseline if with_base else None, cfg=ValidationConfig(**kw),
             )
             for sink in SINKS:
                 df = getattr(res, sink)

@@ -83,7 +83,7 @@ def test_streaming_incremental_stats(spark, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .json(str(src))
     )
-    out = incremental_group_stats(stream)
+    out = incremental_group_stats(stream, key_col="key")
     name = f"inc_{int(time.time() * 1000)}"
     q = (
         out.writeStream.outputMode("update")
@@ -185,7 +185,6 @@ def test_kafka_shaped_stream_microbatches(spark, tmp_path):
     write_kafka_shaped(
         src, path, topic="t",
         value_struct=F.struct("id", "grp", "amount"), key_col=F.col("grp"),
-        n_files=6,
     )
     wire = spark.read.parquet(path)
     assert set(wire.columns) == {f.name for f in KAFKA_WIRE_SCHEMA.fields}
