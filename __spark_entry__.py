@@ -6271,7 +6271,7 @@ FROM kk
 # --------------------------------------------------------------------------
 # q121: runner-integrated mergeable states — the resumable protocol itself
 # (plant-done → crash → resume, q61's shape) now WRITES per-partition state
-# rows ({out}/states, ValidationConfig.emit_states), and
+# rows ({out}/states, ValidationConfig.state_hist_edges), and
 # table_stats_from_states folds them into table-level stats without ever
 # rescanning settled partitions. Unlike q61's closed-form oracle, the clip
 # table here is DERIVED deterministically from the documents testdata, so
@@ -6316,7 +6316,6 @@ def q121_state_table_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     cfg = ValidationConfig(
         check_audio=False,
-        emit_states=True,
         state_hist_edges={"dur_ms": _Q121_EDGES},
     )
     started = datetime.now(timezone.utc)

@@ -25,16 +25,14 @@ from pyspark.sql import functions as F
 def duplicate_keys(
     df: DataFrame,
     key: str = "clip_id",
-    n_salt: int = 64,
     scope_per_partition: bool = True,
 ) -> DataFrame:
     """Keys appearing more than once → (part_id?, key, dup_count).
 
     ONE shuffle on the key; map-side combine bounds the reducer's input for
-    any skew (see module docstring). ``n_salt`` is accepted for call-site
-    compatibility and intentionally unused here — salting counts is a
-    pessimization. ``scope_per_partition=True`` checks uniqueness within
-    each table partition (the per-partition verdict unit); False globally.
+    any skew, so the counts take no salt (see module docstring).
+    ``scope_per_partition=True`` checks uniqueness within each table
+    partition (the per-partition verdict unit); False globally.
     """
     group_final = ["part_id", key] if scope_per_partition else [key]
     return (
@@ -184,8 +182,9 @@ def duplicate_exemplars(df: DataFrame, key: str, id_col: str) -> DataFrame:
 
 def uniqueness_violations(df: DataFrame, n_salt: int) -> DataFrame:
     """Violation rows (part_id, clip_id, check_name, detail) for clip_ids
-    duplicated within a ``part_id``."""
-    dups = duplicate_keys(df, n_salt=n_salt)
+    duplicated within a ``part_id``. ``n_salt`` is not read: the counts
+    take no salt, and the benchmark's layer trace still passes it."""
+    dups = duplicate_keys(df)
     # SQL text: one py4j call where Column algebra took dozens (checks/sqltext)
     return dups.selectExpr(
         "CAST(part_id AS INT) AS part_id",

@@ -56,9 +56,8 @@ class _Ckpt:
     the session has a reliable checkpoint dir configured
     (``sc.setCheckpointDir`` to HDFS/object storage — the spark-submit
     path), use true ``checkpoint()``; fall back to localCheckpoint on
-    dirless local runs (this box, and Spark Connect sessions where the
-    driver SparkContext is unreachable), where executor loss means the
-    whole JVM died anyway.
+    dirless local runs, where executor loss means the whole JVM died
+    anyway.
 
     The reliable path follows the GraphX PeriodicCheckpointer protocol:
     persist before checkpoint (otherwise the eager materializing job AND
@@ -97,12 +96,7 @@ class _Ckpt:
         than a separate eager count recomputing the plan). The caller
         must invoke ``committed`` after that action for unpersist +
         stale-file cleanup."""
-        try:
-            sc = df.sparkSession.sparkContext
-            reliable = sc.getCheckpointDir() is not None
-        except Exception:  # Spark Connect: no driver-side SparkContext
-            return df.localCheckpoint(eager=False)
-        if not reliable:
+        if df.sparkSession.sparkContext.getCheckpointDir() is None:
             return df.localCheckpoint(eager=False)
         from pyspark import StorageLevel
 

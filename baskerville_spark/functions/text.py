@@ -289,7 +289,7 @@ def oov_rate(df: DataFrame, vocab: DataFrame) -> DataFrame:
 ZIPF_TOP_K = 500  # most frequent tokens ``zipf_fit`` fits
 
 
-def zipf_fit(df: DataFrame, text_col: str = "text") -> DataFrame:
+def zipf_fit(df: DataFrame, text_col: str) -> DataFrame:
     """Zipf power-law fit over the corpus token-frequency curve: OLS of
     ln(freq) on ln(rank) over the ``ZIPF_TOP_K`` most frequent tokens
     (whitespace tokens of lower(trim(text)), the q80 vocab convention;

@@ -30,7 +30,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
 from baskerville_spark import audio
-from baskerville_spark.schema import CLIP_SCHEMA, TRANSCRIPT_REF_SCHEMA
+from baskerville_spark.schema import CLIP_SCHEMA, DUR_MS_MAX, TRANSCRIPT_REF_SCHEMA
 
 _WORDS = (
     "alpha bravo charlie delta echo foxtrot golf hotel india juliet kilo lima "
@@ -55,11 +55,10 @@ MP3_MOD, MP3_OFF = 5, 2  # drift-partition rows with an unseen codec
 
 @dataclass(frozen=True)
 class GenConfig:
-    n_rows: int = 1000
-    n_parts: int = 4
+    n_rows: int
+    n_parts: int
     dur_min_ms: int = 50
     dur_max_ms: int = 500
-    dur_range_max_ms: int = 30000  # declared valid range for the range check
 
 
 def part_of(i: int, cfg: GenConfig) -> int:
@@ -130,7 +129,7 @@ def _row(i: int, cfg: GenConfig) -> dict:
     if not clean and i % NULL_MOD == NULL_OFF:
         dur_col = None
     elif not clean and i % RANGE_MOD == RANGE_OFF:
-        dur_col = cfg.dur_range_max_ms + int(rng.integers(1, 10_000_000))
+        dur_col = DUR_MS_MAX + int(rng.integers(1, 10_000_000))
 
     return {
         "clip_id": cid,

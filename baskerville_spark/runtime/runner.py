@@ -1,25 +1,22 @@
-"""Validation runner: one table of built-in checks compiled into verdicts +
-violations + stats, and the resumable run around it.
+"""Validation runner: the built-in checks run into verdicts + violations +
+stats, and the resumable run around it.
 
 Query-lifecycle parity with the reference's fixed step DAG
 ``preprocessing → group_by → feature_calculation → label_or_predict → save``
 (src/baskerville/models/base_spark.py:82-97) re-expressed as declarative
 DataFrame plans:
 
-  schema-enforce → [stats agg | uniqueness agg | RI anti-join |
-                    drift agg | audio-invariant mapInArrow] → verdicts/violations
+  slim projection → [stats agg | uniqueness agg | RI anti-join | pattern |
+                     drift agg | audio-invariant mapInArrow] → verdicts/violations
 
-The check table: ``CHECKS`` holds one row per built-in check — the verdict
-check names (or the sink) it owns, the inputs it reads, when it is enabled
-(a predicate on the config and the caller's frames) and its builder, whose
-projection is SQL text (``checks/sqltext``). ``run_validation`` compiles it:
-every violation row joins one union whose check names form the pass/fail
-grid, every verdict row one verdict union. The inputs are the caller's
-clips, transcript dimension and baseline, the slim projection and its
-stats. Every metadata check and the stats read the slim projection, and
-the stats sink and the verdict grid read the stats, so both are persisted
-and filled eagerly; only the invariant row decodes payloads, once per
-clip. Adding a check means one row in ``CHECKS`` plus one test.
+``run_validation`` builds each check in turn; projections are SQL text
+(``checks/sqltext``). Each violation frame joins one union together with
+the check names it owns, which form the pass/fail grid; each verdict frame
+joins one verdict union. Every metadata check and the stats read the slim
+projection, and the stats sink and the verdict grid read the stats, so
+both are persisted and filled eagerly; only the invariant check decodes
+payloads, once per clip. Adding a check means a few lines in
+``run_validation`` plus one test.
 
 Scale design (100 TB):
 - ONE payload-free projection of the fact table is materialized and feeds
@@ -45,12 +42,11 @@ from __future__ import annotations
 
 import json
 import sys
-from collections import defaultdict
 from concurrent.futures import ThreadPoolExecutor
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 from datetime import datetime, timezone
 from functools import reduce
-from typing import Callable
+from typing import ClassVar
 
 from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
@@ -62,16 +58,14 @@ from baskerville_spark.checks import stats_state as stats_state_mod
 from baskerville_spark.checks import suite as suite_mod
 from baskerville_spark.checks.schema_check import ColumnSpec, pattern_violations
 from baskerville_spark.runtime import manifest as manifest_mod
+from baskerville_spark.schema import DUR_MS_MAX
 
-#: Schema spec for the clip table: the enforced version of the reference's
-#: declared-but-unenforced log schema (data/samples/log_schema.json).
+#: Value patterns of the clip table, checked as ``pattern:<column>``
+#: violation rows: the reference declares such patterns in its log schema
+#: (data/samples/log_schema.json) but never checks them.
 CLIP_SPECS = [
-    ColumnSpec("clip_id", "string", required=True, drop_if_missing=True,
-               pattern=r"^clip_[0-9]{12}$"),
-    ColumnSpec("codec", "string", pattern=r"^(pcm_s16le|flac|opus)$"),
-    ColumnSpec("sr_hz", "int"),
-    ColumnSpec("dur_ms", "int"),
-    ColumnSpec("transcript", "string"),
+    ColumnSpec("clip_id", pattern=r"^clip_[0-9]{12}$"),
+    ColumnSpec("codec", pattern=r"^(pcm_s16le|flac|opus)$"),
 ]
 
 #: the payload-free projection every metadata check reads
@@ -82,19 +76,20 @@ STATE_DISTINCT_COLS = ("clip_id",)
 
 @dataclass(frozen=True)
 class ValidationConfig:
-    null_rate_max: float = 0.05
-    range_bounds: dict = field(
-        default_factory=lambda: {"dur_ms": (1.0, 30000.0), "sr_hz": (8000.0, 48000.0)}
-    )
-    n_salt: int = 64
+    # the thresholds and columns every run checks (no caller sets others)
+    null_rate_max: ClassVar[float] = 0.05
+    range_bounds: ClassVar[dict] = {
+        "dur_ms": (1.0, float(DUR_MS_MAX)), "sr_hz": (8000.0, 48000.0)
+    }
+    n_salt: ClassVar[int] = 64
+    numeric_cols: ClassVar[tuple] = ("sr_hz", "dur_ms")
+
     check_audio: bool = True
-    numeric_cols: tuple = ("sr_hz", "dur_ms")
     # mergeable per-partition state rows (checks/stats_state.py): written to
     # {out_dir}/states so table-level stats fold from tiny state rows
-    # instead of rescanning settled partitions. Off by default — existing
-    # verdict grids and sink layouts are unchanged.
-    emit_states: bool = False
-    state_hist_edges: dict = field(default_factory=dict)  # col -> bin edges
+    # instead of rescanning settled partitions. Maps a column to its
+    # histogram bin edges ({} for none); None writes no states sink.
+    state_hist_edges: dict | None = None
     # user-declared constraint suite (checks/suite.py Constraints, e.g. from
     # suite_from_json): ONE extra aggregate over the slim projection, as
     # suite:<name> verdict rows. Constraints may reference only META_COLS —
@@ -107,8 +102,8 @@ class ValidationResult:
     verdicts: DataFrame
     violations: DataFrame
     stats: DataFrame
-    states: DataFrame | None = None
-    persisted: list = field(default_factory=list)
+    states: DataFrame | None
+    persisted: list
 
     def unpersist(self) -> None:
         """Release every DataFrame run_validation persisted. Call after the
@@ -153,68 +148,6 @@ def _violation_verdicts(
     )
 
 
-@dataclass(frozen=True)
-class Check:
-    """One built-in check: a row of ``CHECKS``."""
-
-    owns: tuple          # verdict check names (exact for violation rows) or the sink
-    sink: str            # violations | verdicts | states
-    reads: tuple         # inputs handed to ``build`` after cfg
-    enabled: Callable[[ValidationConfig, dict], bool]  # (cfg, inputs by name)
-    build: Callable[..., DataFrame]
-
-
-def _suite(cfg: ValidationConfig, slim: DataFrame) -> DataFrame:
-    return suite_mod.run_suite(slim, list(cfg.extra_suite), group_by=["part_id"]).selectExpr(
-        "CAST(part_id AS INT) AS part_id",
-        "concat('suite:', check_name) AS check_name",
-        "passed", "metric_value", "threshold", "n_rows", "n_violations",
-    )
-
-
-def _states(cfg: ValidationConfig, slim: DataFrame) -> DataFrame:
-    return stats_state_mod.stats_state(
-        slim, ["part_id"], list(cfg.numeric_cols),
-        [c for c in STATE_DISTINCT_COLS if c in slim.columns],
-        hist_cols=dict(cfg.state_hist_edges) or None,
-    )
-
-
-#: Every built-in check, in union order.
-CHECKS: tuple[Check, ...] = (
-    Check(("null_rate:*", "range:*"), "verdicts", ("stats",), lambda cfg, i: True,
-          lambda cfg, st: stats.stats_verdicts(st, cfg.null_rate_max, cfg.range_bounds)),
-    Check(("uniqueness",), "violations", ("slim",), lambda cfg, i: True,
-          lambda cfg, slim: uniqueness.uniqueness_violations(slim, n_salt=cfg.n_salt)),
-    Check(("ref_integrity",), "violations", ("slim", "tref"),
-          lambda cfg, i: i["tref"] is not None,
-          lambda cfg, slim, tref: referential.ref_integrity_violations(slim, tref)),
-    Check(tuple(f"pattern:{s.name}" for s in CLIP_SPECS if s.pattern),
-          "violations", ("slim",),
-          lambda cfg, i: any(s.pattern and s.name in i["clips"].columns
-                             for s in CLIP_SPECS),
-          lambda cfg, slim: pattern_violations(slim, CLIP_SPECS)),
-    Check(("snr", "decode_error", "transcript_eq"), "violations", ("clips", "tref"),
-          lambda cfg, i: cfg.check_audio,
-          lambda cfg, clips, tref: inv_mod.invariant_violations(
-              inv_mod.audio_invariant(clips, tref))),
-    Check(("psi:*", "ks:*"), "verdicts", ("slim", "baseline"),
-          lambda cfg, i: bool(i["baseline"]),
-          lambda cfg, slim, base: drift_mod.drift_verdicts(slim, base)),
-    Check(("suite:*",), "verdicts", ("slim",), lambda cfg, i: bool(cfg.extra_suite), _suite),
-    Check(("states",), "states", ("slim",), lambda cfg, i: cfg.emit_states, _states),
-)
-
-
-def _fill(dfs: list[DataFrame]) -> None:
-    """Fill persisted frames eagerly: a cache first executed as a subtree
-    of a larger plan does not reliably populate (observed under AQE). Frames
-    filled together run CONCURRENTLY, so independent jobs back-fill each
-    other's task tails (guide §2.6)."""
-    with ThreadPoolExecutor(max_workers=len(dfs)) as pool:
-        list(pool.map(lambda df: df.count(), dfs))
-
-
 def run_validation(
     spark: SparkSession,
     clips: DataFrame,
@@ -223,43 +156,72 @@ def run_validation(
     *,
     cfg: ValidationConfig,
 ) -> ValidationResult:
-    """Compile ``CHECKS`` into the verdict / violation / stats plans.
+    """The verdict / violation / stats (and states) plans of the built-in
+    checks.
 
     Shared inputs and the NARROW violation rows (tiny relative to input)
     are cached and filled eagerly, so materializing verdicts and violations
     does not re-run the expensive scans (in particular the audio decode).
-    At cluster scale the equivalent is writing these intermediates to the
-    results table and reading back — same O(output) cost.
+    A cache first executed as a subtree of a larger plan does not reliably
+    populate (observed under AQE). At cluster scale the equivalent is
+    writing these intermediates to the results table and reading back —
+    same O(output) cost.
     """
     # slim fills first, so the stats and the checks read its cache
     slim = clips.select(*[c for c in META_COLS if c in clips.columns]).persist()
-    _fill([slim])
+    slim.count()
     st = stats.column_stats(
         slim, numeric_cols=list(cfg.numeric_cols),
         other_cols=["clip_id", "codec", "transcript"],
     ).persist()
-    inputs = {"clips": clips, "tref": transcript_ref, "baseline": baseline_rows,
-              "slim": slim, "stats": st}
-    rows = [c for c in CHECKS if c.enabled(cfg, inputs)]
+    verdicts = [stats.stats_verdicts(st, cfg.null_rate_max, cfg.range_bounds)]
 
-    out: dict[str, list[DataFrame]] = defaultdict(list)
-    for c in rows:
-        out[c.sink].append(c.build(cfg, *(inputs[n] for n in c.reads)))
-    violations = reduce(DataFrame.unionByName, out["violations"]).persist()
-    _fill([st, violations])
+    # each violation frame with the check names it owns, in union order
+    frames = [uniqueness.uniqueness_violations(slim, n_salt=cfg.n_salt)]
+    names = ["uniqueness"]
+    if transcript_ref is not None:
+        frames.append(referential.ref_integrity_violations(slim, transcript_ref))
+        names.append("ref_integrity")
+    pattern = pattern_violations(slim, CLIP_SPECS)
+    if pattern is not None:
+        frames.append(pattern)
+        names += [f"pattern:{s.name}" for s in CLIP_SPECS]
+    if cfg.check_audio:
+        frames.append(inv_mod.invariant_violations(
+            inv_mod.audio_invariant(clips, transcript_ref)))
+        names += ["snr", "decode_error", "transcript_eq"]
+
+    if baseline_rows:
+        verdicts.append(drift_mod.drift_verdicts(slim, baseline_rows))
+    if cfg.extra_suite:
+        verdicts.append(
+            suite_mod.run_suite(slim, list(cfg.extra_suite), group_by=["part_id"]).selectExpr(
+                "CAST(part_id AS INT) AS part_id",
+                "concat('suite:', check_name) AS check_name",
+                "passed", "metric_value", "threshold", "n_rows", "n_violations",
+            )
+        )
+    states = None
+    if cfg.state_hist_edges is not None:
+        states = stats_state_mod.stats_state(
+            slim, ["part_id"], list(cfg.numeric_cols),
+            [c for c in STATE_DISTINCT_COLS if c in slim.columns],
+            hist_cols=cfg.state_hist_edges,
+        )
+
+    violations = reduce(DataFrame.unionByName, frames).persist()
+    # filled CONCURRENTLY, so each job back-fills the other's task tail
+    # (guide §2.6)
+    with ThreadPoolExecutor(max_workers=2) as pool:
+        list(pool.map(DataFrame.count, (st, violations)))
 
     part_rows = st.where("column_name = 'clip_id'").selectExpr(
         "part_id", "`count` + null_count AS n_rows"
     )  # per-partition row counts from stats: no extra scan of the fact
-    names = [n for c in rows if c.sink == "violations" for n in c.owns]
-    out["verdicts"].append(_violation_verdicts(violations, part_rows, names))
-
-    def sink(name: str) -> DataFrame | None:
-        return reduce(DataFrame.unionByName, out[name]) if out[name] else None
-
+    verdicts.append(_violation_verdicts(violations, part_rows, names))
     return ValidationResult(
-        verdicts=sink("verdicts"), violations=violations, stats=st,
-        states=sink("states"), persisted=[slim, st, violations],
+        verdicts=reduce(DataFrame.unionByName, verdicts), violations=violations,
+        stats=st, states=states, persisted=[slim, st, violations],
     )
 
 
@@ -467,7 +429,7 @@ def table_stats_from_states(
         [],
         list(cfg.numeric_cols),
         distinct,
-        hist_cols=dict(cfg.state_hist_edges) or None,
+        hist_cols=cfg.state_hist_edges,
     )
     return stats_state_mod.finalize_stats(merged, distinct)
 

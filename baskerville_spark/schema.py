@@ -13,6 +13,10 @@ from pyspark.sql import types as T
 # Input tables (BASELINE.json input_hint)
 # --------------------------------------------------------------------------
 
+#: Declared upper bound of ``dur_ms``: the validator's range check and the
+#: generator's injected out-of-range durations both read it.
+DUR_MS_MAX = 30000
+
 #: Audio clip fact table. At design scale an Iceberg table partitioned by
 #: bucket(clip_id) x days(ingested_at); `part_id` stands in for the Iceberg
 #: partition id in this repo (parquet partitioned by part_id).

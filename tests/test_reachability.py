@@ -1,6 +1,7 @@
 """Every top-level def, class and module constant in ``baskerville_spark/``
-has a production caller, and every defaulted parameter of a public one is
-set by a production call and left at its default by another.
+has a production caller, every defaulted parameter of a public one is set
+by a production call and left at its default by another, and every
+parameter of a def in the package or a root file is read by its body.
 
 The roots are the entry points: the CLI (``baskerville_spark/main.py``), the
 gate table and driver API of ``__spark_entry__.py``, ``bench.py``,
@@ -18,20 +19,30 @@ reaches all of them, and reaching a class reaches all of its methods.
 The parameter walk matches calls by callee name only. A defaulted parameter
 of a public function, public method or ``__init__`` (called by its class's
 name) is live when two calls to that name in the package or a root file
-disagree about it:
+disagree about it. A field of a public ``@dataclass`` that has a default
+and is not a ``ClassVar`` is a parameter of its class's ``__init__``:
 
 - some call sets it: passes it, by keyword or by position, a literal that
   differs from the default in value or type (``ast.literal_eval``; ``3`` is
   not ``3.0``, ``1`` is not ``True``), any non-literal expression, or
   ``*args``/``**kwargs``;
-- some call relies on the default: omits it, passes the default literal
-  itself, or passes ``*args``/``**kwargs``.
+- some call relies on the default: omits it, or passes
+  ``*args``/``**kwargs``.
 
-A parameter no call sets is a knob with one value: a constant in the body,
-or a module constant a test monkeypatches when it needs another value. A
-parameter every call sets is an input the caller owns: it loses its
-default and becomes required. Either way the branches only the other
-values reached go. ``ALLOWED_PARAMS`` names each exception with its reason.
+A call that spells out the default literal itself does neither: it would
+not change if the default did.
+
+A parameter no call sets is a knob with one value: a constant in the body
+(a ``ClassVar`` for a dataclass field), or a module constant a test
+monkeypatches when it needs another value. A parameter every call sets is
+an input the caller owns: it loses its default and becomes required.
+Either way the branches only the other values reached go.
+
+A parameter its def never loads, in the body or in a nested def or lambda,
+is dropped with its arguments. Exempt are ``self``/``cls``, names that
+start with ``_`` (a callback's fixed signature), and the gate callables of
+``__spark_entry__._GATES``, whose ``(spark, sf_dir)`` signature the driver
+fixes. ``ALLOWED_PARAMS`` names each other exception with its reason.
 """
 
 import ast
@@ -47,10 +58,16 @@ ALLOWED = {
     ("baskerville_spark.runtime.metrics", "render_prometheus"),
 }
 # Defaulted parameters that production calls do not both set and leave at
-# the default, each with its reason.
+# the default, and parameters their def never reads, each with its reason.
 ALLOWED_PARAMS = {
     ("baskerville_spark.main", "main", "argv"):
         "test seam: the CLI tests pass the argument list instead of sys.argv",
+    ("baskerville_spark.runtime.runner", "run_validation", "spark"):
+        "unread; perfbench's validate_cold layer trace passes it as written",
+    ("baskerville_spark.checks.uniqueness", "uniqueness_violations", "n_salt"):
+        "unread; perfbench's validate_cold layer trace passes it as written",
+    ("scripts.check_oracle", "type_check", "name"):
+        "unread; perfbench's gates_slow check passes it positionally",
 }
 # Definitions an outside driver calls by name.
 DRIVER_API = {"__spark_entry__": ("entry", "queries", "oracle_sql")}
@@ -217,17 +234,38 @@ def test_every_package_definition_has_a_production_caller():
     )
 
 
+def _dataclass_fields(cls):
+    """(field, default node or None) of each ``__init__`` field of a
+    ``@dataclass``, in order: ``ClassVar``s are not fields, and a
+    ``field(default_factory=...)`` default is the call itself (no literal)."""
+    for s in cls.body:
+        if not (isinstance(s, ast.AnnAssign) and isinstance(s.target, ast.Name)):
+            continue
+        ann = s.annotation.value if isinstance(s.annotation, ast.Subscript) else s.annotation
+        if _dotted(ann) in (["ClassVar"], ["typing", "ClassVar"]):
+            continue
+        default = s.value
+        if isinstance(default, ast.Call) and _dotted(default.func) == ["field"]:
+            kw = {k.arg: k.value for k in default.keywords}
+            default = kw.get("default", default if "default_factory" in kw else None)
+        yield s.target.id, default
+
+
 def _defaulted_params(tree):
     """(qualname, callee name, parameter, position or None, default node)
     of each defaulted parameter of the module's public functions, public
-    methods and ``__init__``s; the position skips ``self``, and
-    keyword-only parameters have none."""
+    methods, ``__init__``s and public dataclass fields; the position skips
+    ``self``, and keyword-only parameters have none."""
     fns = []
     for node in tree.body:
         if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
             if not node.name.startswith("_"):
                 fns.append((node.name, node.name, node, 0))
         elif isinstance(node, ast.ClassDef) and not node.name.startswith("_"):
+            if any(_dotted(getattr(d, "func", d)) == ["dataclass"] for d in node.decorator_list):
+                for i, (name, default) in enumerate(_dataclass_fields(node)):
+                    if default is not None:
+                        yield f"{node.name}.__init__", node.name, name, i, default
             for m in node.body:
                 if isinstance(m, (ast.FunctionDef, ast.AsyncFunctionDef)) and (
                     not m.name.startswith("_") or m.name == "__init__"
@@ -281,9 +319,9 @@ def _calls(trees):
 
 def _passes(call, param, pos, default):
     """What one call passes ``param``: ``"star"`` for ``*args``/``**kwargs``,
-    ``"default"`` when it omits the parameter or passes the default literal,
-    ``"other"`` for a literal of another value or type or any other
-    expression."""
+    ``"default"`` when it omits the parameter, ``"same"`` for the default
+    literal itself, ``"other"`` for a literal of another value or type or
+    any other expression."""
     args, kw, star = call
     if star:
         return "star"
@@ -295,7 +333,7 @@ def _passes(call, param, pos, default):
     value, dflt = _literal(arg), _literal(default)
     if value is _NOT_LITERAL or dflt is _NOT_LITERAL or type(value) is not type(dflt) or value != dflt:
         return "other"
-    return "default"
+    return "same"
 
 
 def dead_defaults(modules=None):
@@ -311,7 +349,7 @@ def dead_defaults(modules=None):
             continue
         for qual, call, param, pos, default in _defaulted_params(m.tree):
             seen = {_passes(c, param, pos, default) for c in calls.get(call, ())}
-            if "star" in seen or seen == {"default", "other"}:
+            if "star" in seen or {"default", "other"} <= seen:
                 continue
             if (name, qual, param) not in ALLOWED_PARAMS:
                 out.append((name, qual, param))
@@ -327,10 +365,63 @@ def test_every_defaulted_parameter_is_set_by_a_production_call():
     )
 
 
+def _gate_callables(modules):
+    """Names of the callables in ``__spark_entry__._GATES``'s rows."""
+    m = modules.get("__spark_entry__")
+    for stmt in m.tree.body if m else ():
+        if isinstance(stmt, ast.Assign) and any(
+            isinstance(t, ast.Name) and t.id == "_GATES" for t in stmt.targets
+        ):
+            return {row.elts[0].id for row in stmt.value.elts}
+    return set()
+
+
+def _defs(node, prefix=""):
+    """(qualname, def) of every def under ``node``, nested ones included."""
+    for child in ast.iter_child_nodes(node):
+        if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+            qual = prefix + child.name
+            if not isinstance(child, ast.ClassDef):
+                yield qual, child
+            yield from _defs(child, qual + ".")
+        else:
+            yield from _defs(child, prefix)
+
+
+def unread_params(modules=None):
+    """Sorted ``(module, qualname, parameter)`` of every parameter of a def
+    in the package or a root file that the def never loads."""
+    modules = _load() if modules is None else modules
+    gates = _gate_callables(modules)
+    out = []
+    for name, m in modules.items():
+        for qual, fn in _defs(m.tree):
+            if name == "__spark_entry__" and qual in gates:
+                continue
+            a = fn.args
+            params = a.posonlyargs + a.args + a.kwonlyargs + [x for x in (a.vararg, a.kwarg) if x]
+            loads = {n.id for s in fn.body for n in ast.walk(s) if isinstance(n, ast.Name)}
+            for i, p in enumerate(params):
+                if p.arg in loads or p.arg.startswith("_") or (i == 0 and p.arg in ("self", "cls")):
+                    continue
+                if (name, qual, p.arg) not in ALLOWED_PARAMS:
+                    out.append((name, qual, p.arg))
+    return sorted(out)
+
+
+def test_every_parameter_is_read():
+    unread = unread_params()
+    assert not unread, "parameters their def never reads (drop them and their arguments):\n" + "\n".join(
+        f"  {m}.{q}({p})" for m, q, p in unread
+    )
+
+
 def test_parameter_guard_compares_values():
     """A parameter whose only calls pass its own default is unset, one that
-    every call passes another value has a dead default; one call leaving
-    the default and another setting it, or a ``**kw`` call, keep it."""
+    every call passes, another value or the default spelled out, has a dead
+    default; one call leaving the default and another setting it, or a
+    ``**kw`` call, keep it. A dataclass field with a default is an
+    ``__init__`` parameter; a ``ClassVar`` is not."""
     src = '''
 def op(df, a=1, b="x", c=2.0, d=None, e=True):
     return df
@@ -344,6 +435,17 @@ def one_value(df, g=1):
 def two_values(df, h=1):
     return df
 
+def spelled(df, k=1):
+    return df
+
+@dataclass(frozen=True)
+class Cfg:
+    n: int
+    a: int = 1
+    b: tuple = ()
+    c: ClassVar[int] = 2
+    d: dict = field(default_factory=dict)
+
 def run(df, kw, y):
     op(df, a=1, b="x")
     op(df, 1, "x", c=2.5)
@@ -353,12 +455,47 @@ def run(df, kw, y):
     one_value(df, 5)
     two_values(df, h=2)
     two_values(df, 3)
+    spelled(df, k=1)
+    spelled(df, k=2)
+    Cfg(3)
+    Cfg(3, 2)
 '''
     mod = f"{PKG}.synthetic"
     got = dead_defaults({mod: SimpleNamespace(tree=ast.parse(src))})
     assert got == [
+        (mod, "Cfg.__init__", "b"), (mod, "Cfg.__init__", "d"),
         (mod, "one_value", "g"), (mod, "op", "a"), (mod, "op", "b"),
-        (mod, "op", "e"), (mod, "two_values", "h"),
+        (mod, "op", "e"), (mod, "spelled", "k"), (mod, "two_values", "h"),
+    ]
+
+
+def test_unread_parameter_guard():
+    """A parameter no load in its def's body reaches is unread; a nested
+    def or lambda reading it, ``self``, ``_``-prefixed names and the gate
+    table's callables are exempt."""
+    src = '''
+def op(df, unused, used, _cb_arg, *args, **kw):
+    return lambda: df[used] + len(args)
+
+class Op:
+    def method(self, x, y):
+        def inner(z):
+            return x
+        return inner
+
+def q1_gate(spark, sf_dir):
+    return 1
+
+def q2_helper(spark, sf_dir):
+    return 2
+
+_GATES = ((q1_gate, "SELECT 1"),)
+'''
+    mod = "__spark_entry__"
+    got = unread_params({mod: SimpleNamespace(tree=ast.parse(src))})
+    assert got == [
+        (mod, "Op.method", "y"), (mod, "Op.method.inner", "z"), (mod, "op", "kw"),
+        (mod, "op", "unused"), (mod, "q2_helper", "sf_dir"), (mod, "q2_helper", "spark"),
     ]
 
 

@@ -281,7 +281,7 @@ def test_route_quarantine_partitions_input(spark):
 
 
 def test_states_fold_across_interrupted_runs(spark, tmp_path):
-    """emit_states: per-partition mergeable state rows written by TWO
+    """state_hist_edges: per-partition mergeable state rows written by TWO
     separate resumable runs fold (table_stats_from_states) to exactly the
     stats of one full scan — settled partitions are never rescanned."""
     import pyspark.sql.functions as F
@@ -292,7 +292,6 @@ def test_states_fold_across_interrupted_runs(spark, tmp_path):
     write_clips(spark, clips_p, CFG)
     cfg = ValidationConfig(
         check_audio=False,
-        emit_states=True,
         state_hist_edges={"dur_ms": [500.0, 1500.0, 3000.0]},
     )
     now = datetime.now(timezone.utc)

@@ -36,13 +36,13 @@ CASES = [
     ("default", {}, True, False),
     ("default/no_tref", {}, False, False),
     ("no_audio", {"check_audio": False}, True, False),
-    ("no_audio/states", {"check_audio": False, "emit_states": True,
+    ("no_audio/states", {"check_audio": False,
                          "state_hist_edges": {"dur_ms": [500.0, 1500.0, 3000.0]}},
      False, False),
     ("suite_baseline", {"check_audio": False,
                         "extra_suite": (suite.completeness("dur_ok", "dur_ms", 0.01),)},
      True, True),
-    ("all", {"emit_states": True,
+    ("all", {"state_hist_edges": {},
              "extra_suite": (suite.bounds("sr_ok", "sr_hz", 8000, 44100, 0.0),)},
      True, True),
 ]

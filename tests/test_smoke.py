@@ -380,6 +380,6 @@ def test_shared_clip_fixture_keys_on_whole_config(monkeypatch):
 
     a = m._shared_clip_fixture(None, GenConfig(1000, 4))
     assert m._shared_clip_fixture(None, GenConfig(1000, 4)) == a
-    b = m._shared_clip_fixture(None, GenConfig(1000, 4, dur_range_max_ms=9000))
+    b = m._shared_clip_fixture(None, GenConfig(1000, 4, dur_max_ms=900))
     assert b != a
-    assert written == [GenConfig(1000, 4), GenConfig(1000, 4, dur_range_max_ms=9000)]
+    assert written == [GenConfig(1000, 4), GenConfig(1000, 4, dur_max_ms=900)]
