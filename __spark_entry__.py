@@ -2121,7 +2121,7 @@ def q50_pattern_violations(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle brute-forces each pattern as a separate filtered SELECT, so a
     green row proves the one-scan form emits exactly the per-column
     violation rows."""
-    from baskerville_spark.checks.schema_check import ColumnSpec, pattern_violations
+    from baskerville_spark.checks.schema_check import pattern_violations
 
     d = _t(spark, sf_dir, "documents").select(
         (F.col("doc_id") % 4).cast("int").alias("part_id"),
@@ -2132,11 +2132,8 @@ def q50_pattern_violations(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.when(F.col("doc_id") % 23 == 0, F.upper(F.col("lang")))
         .otherwise(F.col("lang")).alias("lang"),
     )
-    specs = [
-        ColumnSpec("source", pattern="^src[0-9]+$"),
-        ColumnSpec("lang", pattern="^[a-z]{2}$"),
-    ]
-    return pattern_violations(d, specs, key="doc_id")
+    patterns = {"source": "^src[0-9]+$", "lang": "^[a-z]{2}$"}
+    return pattern_violations(d, patterns, key="doc_id")
 
 
 _Q50_SQL = """

@@ -10,7 +10,8 @@ Reference parity (src/baskerville/models/log_parsers.py):
   (data/samples/log_schema.json: ipv4, http status ``[1-5][0-9][0-9]``,
   timestamp formats) but never enforced at runtime — SURVEY.md §1.2 flags
   this gap; here patterns ARE enforced, as native ``rlike`` predicates
-  producing violation rows.
+  producing violation rows. They are a ``{column: regex}`` mapping of
+  their own, apart from the ``ColumnSpec`` funnel.
 
 Everything is native expressions — no UDFs, fully pushdown/codegen friendly.
 """
@@ -33,7 +34,6 @@ class ColumnSpec:
     required: bool = False           # add with default if absent
     default: Any = None              # fillna value (None → no fill)
     drop_if_missing: bool = False    # row dropped when null
-    pattern: str | None = None       # rlike regex, violation row when unmatched
 
 
 def add_missing_columns(df: DataFrame, specs: list[ColumnSpec]) -> DataFrame:
@@ -68,30 +68,33 @@ def drop_if_missing(df: DataFrame, specs: list[ColumnSpec]) -> DataFrame:
 
 def pattern_violations(
     df: DataFrame,
-    specs: list[ColumnSpec],
+    patterns: dict[str, str],
     key: str = "clip_id",
-) -> DataFrame | None:
-    """Violation rows for declared-pattern mismatches (the check the
-    reference declared but never ran).
+) -> DataFrame:
+    """Violation rows ``pattern:<column>`` for values that do not match
+    their column's regex in ``patterns`` (the check the reference declared
+    but never ran). A mapped column the frame lacks raises ValueError: a
+    pattern that checks nothing must not read as a pass.
 
     ONE scan for all pattern columns: per-row when(violates, struct) pieces →
     array_compact → explode (rows with no violations explode to nothing).
     The union-of-filtered-branches form this replaces scanned the fact table
     once per pattern column — and rlike predicates don't push down to
     parquet, so each of those scans was a FULL read."""
+    missing = [name for name in patterns if name not in df.columns]
+    if missing:
+        raise ValueError(
+            f"pattern columns {missing} are not in the frame ({df.columns})"
+        )
     pieces = []
-    for s in specs:
-        if s.pattern is None or s.name not in df.columns:
-            continue
-        c = sqltext.ident(s.name)
+    for name, regex in patterns.items():
+        c = sqltext.ident(name)
         v = f"CAST({c} AS STRING)"
         pieces.append(
-            f"CASE WHEN {c} IS NOT NULL AND NOT {v} RLIKE {sqltext.lit(s.pattern)}"
-            f" THEN named_struct('check_name', {sqltext.lit(f'pattern:{s.name}')},"
+            f"CASE WHEN {c} IS NOT NULL AND NOT {v} RLIKE {sqltext.lit(regex)}"
+            f" THEN named_struct('check_name', {sqltext.lit(f'pattern:{name}')},"
             f" 'detail', concat('value=', {v})) END"
         )
-    if not pieces:
-        return None
     # SQL text: one py4j call where Column algebra took dozens (checks/sqltext)
     return df.selectExpr(
         "CAST(part_id AS INT) AS part_id",

@@ -20,8 +20,8 @@ corpus, and the corpus is never touched again). Each merge round is then:
    by array_contains so untouched words skip the fold.
 
 Rounds checkpoint through the same ``_Ckpt`` protocol as the connected-
-components loops (graph.py): persist-before-checkpoint, superseded files
-deleted, lineage truncated — n_merges=32k rounds must not build a 32k-step
+components loops (runtime/checkpoint.py): persist-before-checkpoint,
+superseded files deleted, lineage truncated — n_merges=32k rounds must not build a 32k-step
 plan. Words that shrink to one symbol stop producing pairs, and training
 stops when the best pair occurs only once (noise, not a merge).
 """
@@ -31,7 +31,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from baskerville_spark.functions.graph import _Ckpt
+from baskerville_spark.runtime.checkpoint import _Ckpt
 
 MERGES_SCHEMA = "merge_rank int, lsym string, rsym string, pair_count long"
 

@@ -13,10 +13,15 @@ DataFrame plans:
 (``checks/sqltext``). Each violation frame joins one union together with
 the check names it owns, which form the pass/fail grid; each verdict frame
 joins one verdict union. Every metadata check and the stats read the slim
-projection, and the stats sink and the verdict grid read the stats, so
-both are persisted and filled eagerly; only the invariant check decodes
-payloads, once per clip. Adding a check means a few lines in
-``run_validation`` plus one test.
+projection, which is persisted: it is the one large intermediate and its
+lineage is a single scan. The stats and the violation union are narrow,
+but their plans are not (the union carries the ``mapInArrow`` decode, the
+scans and the aggregates), and a cached frame keeps that lineage: every
+task that reads a cache deserializes the whole plan that built it. So
+both are checkpointed (``runtime/checkpoint._Ckpt``) and every later
+consumer (stats verdicts, verdict grid, sinks, manifest metrics) reads a
+plain RDD scan. Only the invariant check decodes payloads, once per clip.
+Adding a check means a few lines in ``run_validation`` plus one test.
 
 Scale design (100 TB):
 - ONE payload-free projection of the fact table is materialized and feeds
@@ -34,8 +39,13 @@ Scale design (100 TB):
   done partitions are never read at all.
 - Sinks are rebalanced on part_id before their writes, so AQE sizes the
   write tasks by output volume instead of inheriting the inputs' partition
-  counts. The manifest's per-partition metrics come from the in-memory
-  verdict plan, never from a read-back of the written sink.
+  counts. The manifest's per-partition metrics come from the verdict plan
+  over the checkpoints, never from a read-back of the written sink.
+- Executor loss: a local checkpoint cannot be recomputed, so a lost
+  executor fails the run instead of replaying the decode. On a cluster
+  the session sets a checkpoint dir and ``_Ckpt`` writes reliable
+  checkpoints; either way no partition is marked done before its sinks
+  are written, so a failed run is retried from the manifest.
 """
 
 from __future__ import annotations
@@ -56,17 +66,18 @@ from baskerville_spark.checks import invariants as inv_mod
 from baskerville_spark.checks import referential, sqltext, stats, uniqueness
 from baskerville_spark.checks import stats_state as stats_state_mod
 from baskerville_spark.checks import suite as suite_mod
-from baskerville_spark.checks.schema_check import ColumnSpec, pattern_violations
+from baskerville_spark.checks.schema_check import pattern_violations
 from baskerville_spark.runtime import manifest as manifest_mod
+from baskerville_spark.runtime.checkpoint import _Ckpt
 from baskerville_spark.schema import DUR_MS_MAX
 
 #: Value patterns of the clip table, checked as ``pattern:<column>``
 #: violation rows: the reference declares such patterns in its log schema
 #: (data/samples/log_schema.json) but never checks them.
-CLIP_SPECS = [
-    ColumnSpec("clip_id", pattern=r"^clip_[0-9]{12}$"),
-    ColumnSpec("codec", pattern=r"^(pcm_s16le|flac|opus)$"),
-]
+CLIP_SPECS = {
+    "clip_id": r"^clip_[0-9]{12}$",
+    "codec": r"^(pcm_s16le|flac|opus)$",
+}
 
 #: the payload-free projection every metadata check reads
 META_COLS = ("part_id", "clip_id", "sr_hz", "dur_ms", "codec", "transcript")
@@ -103,16 +114,22 @@ class ValidationResult:
     violations: DataFrame
     stats: DataFrame
     states: DataFrame | None
-    persisted: list
+    slim: DataFrame
+    ckpts: tuple
 
     def unpersist(self) -> None:
-        """Release every DataFrame run_validation persisted. Call after the
-        outputs are materialized — long-lived sessions (bench loops, the
-        driver harness) otherwise accumulate cached blocks until executor
-        storage memory is exhausted."""
-        for df in self.persisted:
-            df.unpersist()
-        self.persisted.clear()
+        """Release the persisted slim projection and the stats and
+        violation checkpoints: the local checkpoint's blocks and the
+        reliable checkpoint's files. Call after the outputs are
+        materialized — long-lived sessions (bench loops, the driver
+        harness) otherwise accumulate blocks until executor storage memory
+        is exhausted. Every output reads the checkpoints, so none can be
+        recomputed afterwards."""
+        self.slim.unpersist()
+        for df in (self.stats, self.violations):
+            df._jdf.queryExecution().logical().rdd().unpersist(False)
+        for ckpt in self.ckpts:
+            ckpt.release()
 
 
 def _violation_verdicts(
@@ -159,13 +176,17 @@ def run_validation(
     """The verdict / violation / stats (and states) plans of the built-in
     checks.
 
-    Shared inputs and the NARROW violation rows (tiny relative to input)
-    are cached and filled eagerly, so materializing verdicts and violations
-    does not re-run the expensive scans (in particular the audio decode).
-    A cache first executed as a subtree of a larger plan does not reliably
-    populate (observed under AQE). At cluster scale the equivalent is
-    writing these intermediates to the results table and reading back —
-    same O(output) cost.
+    The slim projection is persisted and filled first; the NARROW stats
+    and violation rows (tiny relative to input) are checkpointed and
+    filled eagerly, so materializing the outputs re-runs neither the scans
+    nor the audio decode, and no task that reads them deserializes the
+    plan that built them. Slim stays a cache: it is the large frame at
+    scale and its lineage is only a scan, so a checkpoint would copy it
+    for nothing. A local checkpoint lost with its executor fails the run
+    loudly (it is not recomputable); with a checkpoint dir set ``_Ckpt``
+    writes reliable checkpoints, and ``run_resumable`` commits nothing
+    before its sinks are written, so a failed run resumes from the
+    manifest.
     """
     # slim fills first, so the stats and the checks read its cache
     slim = clips.select(*[c for c in META_COLS if c in clips.columns]).persist()
@@ -173,8 +194,7 @@ def run_validation(
     st = stats.column_stats(
         slim, numeric_cols=list(cfg.numeric_cols),
         other_cols=["clip_id", "codec", "transcript"],
-    ).persist()
-    verdicts = [stats.stats_verdicts(st, cfg.null_rate_max, cfg.range_bounds)]
+    )
 
     # each violation frame with the check names it owns, in union order
     frames = [uniqueness.uniqueness_violations(slim, n_salt=cfg.n_salt)]
@@ -182,15 +202,23 @@ def run_validation(
     if transcript_ref is not None:
         frames.append(referential.ref_integrity_violations(slim, transcript_ref))
         names.append("ref_integrity")
-    pattern = pattern_violations(slim, CLIP_SPECS)
-    if pattern is not None:
-        frames.append(pattern)
-        names += [f"pattern:{s.name}" for s in CLIP_SPECS]
+    frames.append(pattern_violations(slim, CLIP_SPECS))
+    names += [f"pattern:{c}" for c in CLIP_SPECS]
     if cfg.check_audio:
         frames.append(inv_mod.invariant_violations(
             inv_mod.audio_invariant(clips, transcript_ref)))
         names += ["snr", "decode_error", "transcript_eq"]
 
+    # both checkpoints filled CONCURRENTLY, so each job back-fills the
+    # other's task tail (guide §2.6); every consumer below reads them
+    ckpts = (_Ckpt(), _Ckpt())
+    with ThreadPoolExecutor(max_workers=2) as pool:
+        st, violations = pool.map(
+            lambda ckpt, df: ckpt(df),
+            ckpts, (st, reduce(DataFrame.unionByName, frames)),
+        )
+
+    verdicts = [stats.stats_verdicts(st, cfg.null_rate_max, cfg.range_bounds)]
     if baseline_rows:
         verdicts.append(drift_mod.drift_verdicts(slim, baseline_rows))
     if cfg.extra_suite:
@@ -201,6 +229,10 @@ def run_validation(
                 "passed", "metric_value", "threshold", "n_rows", "n_violations",
             )
         )
+    part_rows = st.where("column_name = 'clip_id'").selectExpr(
+        "part_id", "`count` + null_count AS n_rows"
+    )  # per-partition row counts from stats: no extra scan of the fact
+    verdicts.append(_violation_verdicts(violations, part_rows, names))
     states = None
     if cfg.state_hist_edges is not None:
         states = stats_state_mod.stats_state(
@@ -208,20 +240,9 @@ def run_validation(
             [c for c in STATE_DISTINCT_COLS if c in slim.columns],
             hist_cols=cfg.state_hist_edges,
         )
-
-    violations = reduce(DataFrame.unionByName, frames).persist()
-    # filled CONCURRENTLY, so each job back-fills the other's task tail
-    # (guide §2.6)
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        list(pool.map(DataFrame.count, (st, violations)))
-
-    part_rows = st.where("column_name = 'clip_id'").selectExpr(
-        "part_id", "`count` + null_count AS n_rows"
-    )  # per-partition row counts from stats: no extra scan of the fact
-    verdicts.append(_violation_verdicts(violations, part_rows, names))
     return ValidationResult(
         verdicts=reduce(DataFrame.unionByName, verdicts), violations=violations,
-        stats=st, states=states, persisted=[slim, st, violations],
+        stats=st, states=states, slim=slim, ckpts=ckpts,
     )
 
 
@@ -336,7 +357,19 @@ def run_resumable(
 
     from baskerville_spark.runtime.metrics import observe_violations
 
-    observed, obs = observe_violations(res.violations)
+    # Each sink is rebalanced on part_id before the write, so AQE sizes
+    # the write tasks by data volume (one task for a small run) instead of
+    # the inputs' partition counts, where every task pays a fixed closure
+    # deserialization for a handful of rows and one partition scatters
+    # over several files. repartition("part_id") would not do it: over an
+    # input already hash-partitioned on part_id the optimizer drops it.
+    # The violation metrics are observed ABOVE the rebalance: below it,
+    # when a run has no violations, AQE's empty-relation propagation
+    # drops the observing node together with the empty shuffle stage and
+    # the observation never completes.
+    observed, obs = observe_violations(
+        res.violations.hint("rebalance", "part_id")
+    )
     # Idempotent, fully distributed outputs: partitionBy(part_id) with
     # DYNAMIC partition overwrite, so a partition retried after a crash
     # between these writes and the manifest commit REPLACES its previous
@@ -351,37 +384,29 @@ def run_resumable(
     # first makes retry semantics replace-always, not replace-if-nonempty.
     # Driver-side metadata calls against the FS only — no data moves.
     sinks = [("violations", observed)] + [
-        (n, getattr(res, n)) for n in ("stats", "verdicts", "states")
-        if getattr(res, n) is not None
+        (n, getattr(res, n).hint("rebalance", "part_id"))
+        for n in ("stats", "verdicts", "states") if getattr(res, n) is not None
     ]
     _delete_pending_sink_dirs(
         spark, out_dir, tuple(name for name, _ in sinks), pending
     )
 
-    # The sink writes are independent jobs over already-persisted narrow
+    # The sink writes are independent jobs over the checkpointed narrow
     # intermediates — run them CONCURRENTLY so each write's task tail
     # back-fills the others (guide §2.6); FIFO scheduling keeps this a
     # latency overlap, not a resource fight. Job descriptions/groups are
     # thread-local, so the UI labels stay per-sink.
-    #
-    # Each sink is rebalanced on part_id before the write, so AQE sizes
-    # the write tasks by data volume (one task for a small run) instead of
-    # the inputs' partition counts, where every task pays a fixed closure
-    # deserialization for a handful of rows and one partition scatters
-    # over several files. repartition("part_id") would not do it: over a
-    # cache already hash-partitioned on part_id the optimizer drops it.
     def _write(item: tuple) -> None:
         name, df = item
         (
-            df.hint("rebalance", "part_id")
-            .write.mode("overwrite")
+            df.write.mode("overwrite")
             .option("partitionOverwriteMode", "dynamic")
             .partitionBy("part_id")
             .parquet(f"{out_dir}/{name}")
         )
 
     # Per-partition manifest metrics from the verdict plan itself, which
-    # reads only the persisted intermediates; it runs in the same pool as
+    # reads only the checkpoints; it runs in the same pool as
     # the writes instead of reading the verdicts sink back afterwards.
     def _manifest_metrics() -> list:
         return (

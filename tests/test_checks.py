@@ -160,7 +160,6 @@ def test_schema_enforcement(spark):
         ColumnSpec("a", "string", required=True, default="dflt"),
         ColumnSpec("b", "int", default=0, drop_if_missing=False),
         ColumnSpec("c", "string", drop_if_missing=True),
-        ColumnSpec("code", "string", pattern=r"^[1-5][0-9][0-9]$"),
     ]
     df = spark.createDataFrame(
         [(1, "x", "200"), (None, None, "999"), (2, "y", "abc"), (3, None, None)],
@@ -175,7 +174,7 @@ def test_schema_enforcement(spark):
 
     pv = pattern_violations(
         df.withColumn("part_id", F.lit(0)).withColumn("clip_id", F.col("c")),
-        specs,
+        {"code": r"^[1-5][0-9][0-9]$"},
     )
     bad = {r["detail"] for r in pv.collect()}
     assert bad == {"value=999", "value=abc"}
@@ -208,8 +207,16 @@ def test_pattern_violations_regex_escapes(spark):
         [(0, "k1", "ab12"), (0, "k2", "ab"), (1, "k3", "it's"), (1, "k4", None)],
         "part_id int, clip_id string, v string",
     )
-    pv = pattern_violations(df, [ColumnSpec("v", pattern=r"^(ab\d+|it's)$")])
+    pv = pattern_violations(df, {"v": r"^(ab\d+|it's)$"})
     assert {(r["clip_id"], r["detail"]) for r in pv.collect()} == {("k2", "value=ab")}
+
+
+def test_pattern_violations_missing_column_raises(spark):
+    """A mapped column the frame lacks is an error naming the column, not a
+    pattern that silently checks nothing."""
+    df = spark.createDataFrame([(0, "k1", "x")], "part_id int, clip_id string, v string")
+    with pytest.raises(ValueError, match="'codec'"):
+        pattern_violations(df, {"v": "^x$", "codec": "^flac$"})
 
 
 def test_stats_single_shuffle_plan(t1_clips):

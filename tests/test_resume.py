@@ -123,9 +123,29 @@ def test_sink_contract(spark, tmp_path):
     assert sum(n for n, _ in manifest.values()) == CFG.n_rows
 
 
+def _foreign_rdd_leaves(df, ckpts) -> list[str]:
+    """The RDD leaves of ``df``'s plan that are not one of the ``ckpts``
+    frames' checkpoints, or that ship Python-side rows (a ``PythonRDD`` or
+    ``ParallelCollectionRDD`` in their lineage): one debug string each."""
+    own = {c._jdf.queryExecution().logical().rdd().id() for c in ckpts}
+    leaves = df._jdf.queryExecution().optimizedPlan().collectLeaves()
+    out = []
+    for i in range(leaves.size()):
+        leaf = leaves.apply(i)
+        if leaf.getClass().getSimpleName() != "LogicalRDD":
+            continue
+        lineage = leaf.rdd().toDebugString()
+        if (leaf.rdd().id() not in own or "PythonRDD" in lineage
+                or "ParallelCollectionRDD" in lineage):
+            out.append(lineage)
+    return out
+
+
 def test_verdict_plan_schema_and_no_python_rdd(spark, tmp_path):
     """The verdict grid keeps its schema, nullability included, and its plan
-    ships no Python-side DataFrame (no ``ExistingRDD`` scan)."""
+    ships no Python-side DataFrame: every RDD scan in it reads one of
+    run_validation's checkpoints. The outputs read the checkpoints, not the
+    plans that filled them (no decode, no cache of one)."""
     from baskerville_spark.runtime.runner import run_validation
 
     clips_p = str(tmp_path / "clips")
@@ -143,9 +163,76 @@ def test_verdict_plan_schema_and_no_python_rdd(spark, tmp_path):
         ("n_rows", "bigint", True),
         ("n_violations", "bigint", True),
     ]
-    plan = res.verdicts._jdf.queryExecution().executedPlan().toString()
-    assert "ExistingRDD" not in plan
+    for name in ("verdicts", "violations", "stats"):
+        plan = getattr(res, name)._jdf.queryExecution().executedPlan().toString()
+        assert "MapInArrow" not in plan and "InMemoryRelation" not in plan, name
+    ckpts = (res.stats, res.violations)
+    assert _foreign_rdd_leaves(res.verdicts, ckpts) == []
+    # negative control: a grid shipped from the driver is a foreign leaf
+    grid = spark.createDataFrame([(0, "uniqueness")], "part_id int, check_name string")
+    foreign = _foreign_rdd_leaves(res.verdicts.join(grid, ["part_id", "check_name"]), ckpts)
+    assert len(foreign) == 1 and "PythonRDD" in foreign[0]
     res.unpersist()
+
+
+def test_lost_checkpoint_fails_loudly_and_resumes(spark, tmp_path, monkeypatch):
+    """A violations checkpoint lost after run_validation (an executor loss)
+    fails the run with Spark's checkpoint error and commits nothing; the
+    next run redoes every partition and writes what a clean run writes."""
+    import pytest
+
+    from baskerville_spark.runtime import runner
+    from test_runner_golden import _rows
+
+    clips_p, _, man_p, out_p = _paths(tmp_path)
+    write_clips(spark, clips_p, CFG)
+    cfg = ValidationConfig(check_audio=False)
+    real, lost = runner.run_validation, []
+
+    def losing(*args, **kwargs):
+        res = real(*args, **kwargs)
+        res.violations._jdf.queryExecution().logical().rdd().unpersist(True)
+        lost.append(res)
+        return res
+
+    monkeypatch.setattr(runner, "run_validation", losing)
+    with pytest.raises(Exception, match="CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND"):
+        run_resumable(spark, clips_p, man_p, out_p, cfg=cfg)
+    lost[0].unpersist()
+    assert done_partitions(spark, man_p) == set()
+    monkeypatch.undo()
+
+    assert run_resumable(spark, clips_p, man_p, out_p, cfg=cfg) == [0, 1, 2, 3]
+    clean_man, clean_out = str(tmp_path / "clean_man"), str(tmp_path / "clean_out")
+    assert run_resumable(spark, clips_p, clean_man, clean_out, cfg=cfg) == [0, 1, 2, 3]
+    for sink in ("violations", "stats", "verdicts"):
+        assert _rows(spark.read.parquet(f"{out_p}/{sink}")) == _rows(
+            spark.read.parquet(f"{clean_out}/{sink}")), sink
+
+    def ledger(path):
+        return sorted(
+            tuple(r) for r in spark.read.parquet(path)
+            .select("part_id", "n_rows", "n_violations").collect()
+        )
+
+    assert ledger(man_p) == ledger(clean_man)
+
+
+def test_no_leaked_blocks(spark, tmp_path):
+    """run_resumable, and run_validation followed by unpersist(), leave the
+    session's persisted-RDD count where they found it."""
+    from baskerville_spark.runtime.runner import run_validation
+
+    clips_p, _, man_p, out_p = _paths(tmp_path)
+    write_clips(spark, clips_p, CFG)
+    jsc = spark.sparkContext._jsc
+    before = jsc.getPersistentRDDs().size()
+    assert run_resumable(spark, clips_p, man_p, out_p, cfg=ValidationConfig()) == [0, 1, 2, 3]
+    assert jsc.getPersistentRDDs().size() == before
+    res = run_validation(spark, spark.read.parquet(clips_p), cfg=ValidationConfig())
+    res.verdicts.count()
+    res.unpersist()
+    assert jsc.getPersistentRDDs().size() == before
 
 
 def test_delete_pending_sink_dirs(spark, tmp_path):

@@ -101,6 +101,38 @@ def test_run_validation_sinks_golden(spark):
         assert _same(got[name]["rows"], want[name]["rows"]), name
 
 
+def test_reliable_checkpoint_path_matches_golden(spark, tmp_path):
+    """With a checkpoint dir set, run_validation's checkpoints are reliable
+    files: its sinks equal the golden ``default`` case, and unpersist()
+    deletes every file. The session-global dir is unset afterwards (the
+    JVM setter accepts null) so later tests keep the local path."""
+    from baskerville_spark.runtime.runner import ValidationConfig, run_validation
+
+    with open(GOLDEN) as f:
+        want = json.load(f)
+    ckdir = tmp_path / "ck"
+    sc = spark.sparkContext
+    clips = generate_clips(spark, CFG).cache()
+    tref = generate_transcript_ref(spark, CFG).cache()
+    sc.setCheckpointDir(str(ckdir))
+    try:
+        res = run_validation(spark, clips, tref, cfg=ValidationConfig())
+        assert [p for p in ckdir.rglob("*") if p.is_file()]
+        for sink in ("verdicts", "violations", "stats"):
+            df = getattr(res, sink)
+            name = f"default/{sink}"
+            assert df.schema.jsonValue() == want[name]["schema"], name
+            got = json.loads(json.dumps(_rows(df)))
+            assert _same(got, want[name]["rows"]), name
+        res.unpersist()
+        assert [p for p in ckdir.rglob("*") if p.is_file()] == []
+    finally:
+        sc._jsc.sc().setCheckpointDir(None)
+        clips.unpersist()
+        tref.unpersist()
+    assert sc.getCheckpointDir() is None
+
+
 if __name__ == "__main__":
     from baskerville_spark.session import get_session
 
