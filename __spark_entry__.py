@@ -14,6 +14,7 @@ Synthetic gate fixtures are a per-index ``plant(i)`` run through
 
 from __future__ import annotations
 
+import threading
 import uuid
 from collections.abc import Callable
 from contextlib import contextmanager
@@ -59,6 +60,10 @@ def _docs_wide(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _scan_par(spark, _t(spark, sf_dir, "documents"))
 
 
+#: held while ``_stream_shuffle`` overrides the session-wide setting
+_STREAM_SHUFFLE_LOCK = threading.Lock()
+
+
 @contextmanager
 def _stream_shuffle(spark: SparkSession):
     """Context manager sizing ``spark.sql.shuffle.partitions`` — which fixes
@@ -70,14 +75,26 @@ def _stream_shuffle(spark: SparkSession):
     stage (measured q64: 13.4s -> 5.3s at local[32]). Partition count is a
     function of state size (guide §2.2), so the gate value is independent of
     cluster width; production streams size it through their own session
-    conf. Restores the batch setting on exit."""
-    target = min(8, spark.sparkContext.defaultParallelism)
-    old = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(target))
+    conf. Restores the batch setting on exit.
+
+    The override is session-wide, so the gates that use it run serially: a
+    second entry while one holds it raises RuntimeError instead of letting
+    one exit restore the setting under the other's running query."""
+    if not _STREAM_SHUFFLE_LOCK.acquire(blocking=False):
+        raise RuntimeError(
+            "_stream_shuffle entered while another holder overrides the "
+            "session-wide spark.sql.shuffle.partitions; run streaming gates serially"
+        )
     try:
-        yield
+        target = min(8, spark.sparkContext.defaultParallelism)
+        old = spark.conf.get("spark.sql.shuffle.partitions")
+        spark.conf.set("spark.sql.shuffle.partitions", str(target))
+        try:
+            yield
+        finally:
+            spark.conf.set("spark.sql.shuffle.partitions", old)
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old)
+        _STREAM_SHUFFLE_LOCK.release()
 
 
 def _drain_to_memory(spark: SparkSession, stream: DataFrame, mode: str,
@@ -424,7 +441,7 @@ FROM s WHERE cnt > m + 2 * sd
 # ---------------------------------------------------------------------------
 
 def q11_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from baskerville_spark.functions.text import fingerprint
+    from baskerville_spark.gates.text import fingerprint
 
     d = _t(spark, sf_dir, "documents")
     return fingerprint(d).select(F.col("id").alias("doc_id"), "fingerprint")
@@ -443,7 +460,7 @@ FROM documents
 
 
 def q12_quality_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from baskerville_spark.functions.text import quality_features
+    from baskerville_spark.gates.text import quality_features
 
     d = _t(spark, sf_dir, "documents")
     q = quality_features(d)
@@ -481,14 +498,14 @@ FROM t
 
 
 def q13_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from baskerville_spark.functions.text import lang_id
+    from baskerville_spark.gates.text import lang_id
 
     d = _t(spark, sf_dir, "documents")
     return lang_id(d).select(F.col("id").alias("doc_id"), "pred_lang", "lang_hits")
 
 
 def _langid_sql() -> str:
-    from baskerville_spark.functions.text import STOPWORDS
+    from baskerville_spark.gates.text import STOPWORDS
 
     score = {
         lang: (
@@ -520,7 +537,7 @@ SELECT doc_id, {case_sql} AS pred_lang, {greatest} AS lang_hits FROM s
 # ---------------------------------------------------------------------------
 
 def q14_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from baskerville_spark.functions.similarity import cosine_topk
+    from baskerville_spark.gates.similarity import cosine_topk
 
     emb = _t(spark, sf_dir, "embeddings")
     qvec = [float(x) for x in emb.where("vec_id = 0").select("embedding").first()[0]]
@@ -544,7 +561,7 @@ LIMIT 10
 
 
 def q22_vector_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from baskerville_spark.functions.similarity import brute_force_pairs
+    from baskerville_spark.gates.similarity import brute_force_pairs
 
     # repartition: the testdata table is one parquet file -> one scan task,
     # which would serialize the O(n^2) pair loop on a single core
@@ -577,7 +594,7 @@ WHERE list_sum(list_transform(generate_series(1, len(a.embedding)),
 # ---------------------------------------------------------------------------
 
 def q15_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from baskerville_spark.functions.dedup import ngram_jaccard_pairs
+    from baskerville_spark.gates.dedup import ngram_jaccard_pairs
 
     d = _docs_wide(spark, sf_dir)
     # max_df=20: the stop-shingle guard is ACTIVE at bench scale (sf0.1 max
@@ -611,7 +628,7 @@ WHERE c * 1.0 / (sa.n + sb.n - c) >= 0.8
 
 
 def q16_exact_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from baskerville_spark.functions.dedup import exact_duplicates
+    from baskerville_spark.gates.dedup import exact_duplicates
 
     d = _t(spark, sf_dir, "documents")
     return exact_duplicates(d).select("text_hash", "dup_count")
@@ -690,7 +707,7 @@ def q19_minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     the EXACT (unguarded) Jaccard pair SQL — a green row proves the banded
     MinHash misses no true pair at this threshold on the fixture (recall
     1.0), while the Spark plan touches only candidate docs."""
-    from baskerville_spark.functions.dedup import minhash_lsh_pairs
+    from baskerville_spark.gates.dedup import minhash_lsh_pairs
 
     d = _docs_wide(spark, sf_dir)
     p = minhash_lsh_pairs(d)
@@ -725,7 +742,7 @@ def q20_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     60-bit md5 (dedup._token_hash), so DuckDB reproduces every bit of the
     fingerprint — token hash = ('0x' || substr(md5(tok),1,15))::BIGINT,
     then the same 60 conditional bit-sums."""
-    from baskerville_spark.functions.dedup import simhash
+    from baskerville_spark.gates.dedup import simhash
 
     d = _docs_wide(spark, sf_dir)
     return simhash(d).select(F.col("id").alias("doc_id"), "simhash")
@@ -1084,7 +1101,7 @@ GROUP BY event_type
 def q29_state_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental state upsert (reference request-set cache full_outer merge,
     request_set_cache.py:370-400) via runtime.state.upsert_state."""
-    from baskerville_spark.runtime.state import upsert_state
+    from baskerville_spark.gates.state import upsert_state
 
     e = _t(spark, sf_dir, "events")
     ts_epoch = F.unix_timestamp(F.col("ts").cast("timestamp"))
@@ -1206,7 +1223,7 @@ def q32_srp_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     the brute-force SQL — a green row proves LSH output == exact at this
     threshold (recall 1.0 on the fixture), making q22 the baseline it
     claims to be."""
-    from baskerville_spark.functions.similarity import hyperplane_lsh_pairs
+    from baskerville_spark.gates.similarity import hyperplane_lsh_pairs
 
     aug = _augmented_embeddings(spark, sf_dir)
     p = hyperplane_lsh_pairs(aug)
@@ -1330,7 +1347,7 @@ def q35_simhash_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash match proves the banded equi-join finds EXACTLY the Hamming<=3 set
     (pigeonhole losslessness demonstrated on real data, not just the planted
     pytest pairs)."""
-    from baskerville_spark.functions.dedup import simhash_near_dups
+    from baskerville_spark.gates.dedup import simhash_near_dups
 
     d = _docs_wide(spark, sf_dir)
     return simhash_near_dups(d)
@@ -1386,7 +1403,7 @@ def q37_geo_localize(spark: SparkSession, sf_dir: str) -> DataFrame:
     compute_geotime, udfs.py:41-62, minus the tzwhere dependency): a
     360-entry nautical-timezone table is broadcast once and indexed inside
     an Arrow-batched pandas UDF; local-time math stays JVM-side."""
-    from baskerville_spark.functions.geo import localize_events
+    from baskerville_spark.gates.geo import localize_events
 
     e = _t(spark, sf_dir, "events")
     lon = (F.col("user_id") * 37 % 360 - 180).cast("int")
@@ -1440,7 +1457,7 @@ def q38_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     At scale the assignment is a write-once index column: the ``cluster IN
     (probe set)`` predicate partition/cluster-prunes the scan."""
-    from baskerville_spark.functions.similarity import ivf_topk, train_ivf_centroids
+    from baskerville_spark.gates.similarity import ivf_topk, train_ivf_centroids
 
     emb = _clustered_embeddings(spark, sf_dir)
     # the md5-threshold sampler is independent of the vec_id%8 cluster key
@@ -1504,7 +1521,7 @@ def q40_image_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     path. Images are synthesized in-session (binary payloads can't live in
     the shared testdata) with closed-form features, so the DuckDB oracle
     reproduces them arithmetically."""
-    from baskerville_spark.functions.multimodal import image_features, make_bmp
+    from baskerville_spark.gates.multimodal import image_features, make_bmp
 
     rows = []
     for i in range(240):
@@ -1549,7 +1566,7 @@ def q41_video_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     13th item is a corrupt 'mp4' exercising the stubbed-codec path.
     Synthesized in-session with closed-form per-frame luma so the DuckDB
     oracle reproduces the sampled features arithmetically."""
-    from baskerville_spark.functions.multimodal import sample_frames
+    from baskerville_spark.gates.multimodal import sample_frames
 
     w, h = 4, 4
     rows = []
@@ -1589,7 +1606,7 @@ def q42_dup_exemplars(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Salted two-phase bounded-exemplar aggregation (the case where
     salting is load-bearing — list state, not counts; see
     checks/uniqueness.duplicate_exemplars and docs/PLANS.md)."""
-    from baskerville_spark.checks.uniqueness import duplicate_exemplars
+    from baskerville_spark.gates.uniqueness import duplicate_exemplars
 
     o = _t(spark, sf_dir, "orders")
     out = duplicate_exemplars(o, key="o_custkey", id_col="o_orderkey")
@@ -1772,7 +1789,7 @@ def q45_streaming_kafka_shaped(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
     import tempfile
 
-    from baskerville_spark.sources.kafka_shaped import (
+    from baskerville_spark.gates.kafka_shaped import (
         decode_json_values, read_kafka_shaped_stream, write_kafka_shaped,
     )
 
@@ -1974,7 +1991,7 @@ def q47_jdbc_segment_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows. The Derby scratch dir lives under /tmp and is not reused."""
     import tempfile
 
-    from baskerville_spark.sources.registry import read_jdbc_partitioned
+    from baskerville_spark.gates.registry import read_jdbc_partitioned
 
     derby = {"driver": "org.apache.derby.jdbc.EmbeddedDriver"}
     cust = _t(spark, sf_dir, "customer").select(
@@ -2070,7 +2087,7 @@ def q49_schema_enforce(spark: SparkSession, sf_dir: str) -> DataFrame:
     every surviving row. The per-lang aggregate pins all three behaviors:
     fill shows up as the 'und' group, drop as the missing mod-19 rows in
     every count, add-missing as n_flag == n_docs."""
-    from baskerville_spark.checks.schema_check import ColumnSpec, enforce_schema
+    from baskerville_spark.gates.schema_check import ColumnSpec, enforce_schema
 
     d = _t(spark, sf_dir, "documents").select(
         "doc_id",
@@ -2166,7 +2183,7 @@ def q51_normalized_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     one group. Runs through the same count-first salted
     ``exact_duplicates`` machinery on the normalized column; ids ride out
     as a comma-joined string (array-hashing hazard — see check_oracle)."""
-    from baskerville_spark.functions.dedup import exact_duplicates
+    from baskerville_spark.gates.dedup import exact_duplicates
 
     d = _scan_par(spark, _t(spark, sf_dir, "documents").select("doc_id", "text"))
     clones = d.where(F.col("doc_id") % 7 == 0).select(
@@ -2331,7 +2348,7 @@ def q55_iforest_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     a single false positive or miss breaks it. (The score values
     themselves are not SQL-reproducible — the set-equality verdict is the
     oracle-checkable contract, same pattern as q46.)"""
-    from baskerville_spark.ml.iforest import top_anomalies, train_iforest
+    from baskerville_spark.gates.iforest import top_anomalies, train_iforest
 
     emb = _t(spark, sf_dir, "embeddings")
     feats = emb.select(
@@ -2370,7 +2387,7 @@ def q56_gbm_labeler(spark: SparkSession, sf_dir: str) -> DataFrame:
     +5.0 on the first embedding component, a margin the boosted stumps
     must carve exactly; the gate hashes predicted-positive ids against
     the planted labeling, so one misclassified row breaks it."""
-    from baskerville_spark.ml.gbm import predict_label, train_gbm
+    from baskerville_spark.gates.gbm import predict_label, train_gbm
 
     emb = _t(spark, sf_dir, "embeddings")
     feats = emb.select(
@@ -2418,7 +2435,7 @@ def q57_feature_vector(spark: SparkSession, sf_dir: str) -> DataFrame:
     multi-distinct Expand adds two exchanges; the HLL form
     (exact_distinct=False, graded by q46) is the single-exchange
     10^12-row configuration — plan pinned in tests/test_features.py."""
-    from baskerville_spark.functions.features import feature_vector
+    from baskerville_spark.gates.features import feature_vector
 
     return feature_vector(_t(spark, sf_dir, "events"))
 
@@ -2519,7 +2536,7 @@ def q58_feature_update(spark: SparkSession, sf_dir: str) -> DataFrame:
     UpdaterVariance:116-149; see functions/features.py). One equi-join on
     the group key; both sides arrive hash-partitioned by it from their
     groupBys."""
-    from baskerville_spark.functions.features import (
+    from baskerville_spark.gates.features import (
         UpdateSpec,
         update_feature_vector,
     )
@@ -2672,7 +2689,7 @@ def q59_anomaly_thresholds(spark: SparkSession, sf_dir: str) -> DataFrame:
     an isin() literal from a driver-collected host list; this rides a
     broadcast left join instead — same verdicts, no driver round-trip
     (ml/classify.py)."""
-    from baskerville_spark.ml.classify import classify_anomalies
+    from baskerville_spark.gates.classify import classify_anomalies
 
     e = _t(spark, sf_dir, "events")
     ratio = (
@@ -2721,11 +2738,11 @@ def q60_challenge_commands(spark: SparkSession, sf_dir: str) -> DataFrame:
     divisible by 13), and the exact banjax command JSON
     ({"name":"challenge_ip","value":<key>}, tasks.py:1952-1956) that the
     kafka_shaped sink (q45) would carry to the broker."""
-    from baskerville_spark.functions.web import (
+    from baskerville_spark.gates.web import (
         challenge_commands,
         low_rate_attack,
     )
-    from baskerville_spark.ml.classify import classify_anomalies
+    from baskerville_spark.gates.classify import classify_anomalies
 
     e = _t(spark, sf_dir, "events")
     ts_us = F.unix_micros(F.col("ts").cast("timestamp"))
@@ -2898,9 +2915,9 @@ def q62_feature_loop(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
     import tempfile
 
-    from baskerville_spark.functions.features import UpdateSpec
-    from baskerville_spark.runtime.feature_loop import run_feature_loop
-    from baskerville_spark.runtime.state import StateStore
+    from baskerville_spark.gates.features import UpdateSpec
+    from baskerville_spark.gates.feature_loop import run_feature_loop
+    from baskerville_spark.gates.state import StateStore
 
     e = _t(spark, sf_dir, "events")
     tmp = tempfile.mkdtemp(prefix="bsk_q62_")
@@ -2991,11 +3008,11 @@ def q63_sensitive_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     import tempfile
 
-    from baskerville_spark.runtime.sensitive import (
+    from baskerville_spark.gates.sensitive import (
         cache_sensitive,
         merge_sensitive,
     )
-    from baskerville_spark.runtime.state import StateStore
+    from baskerville_spark.gates.state import StateStore
 
     e = _t(spark, sf_dir, "events")
     sensitive_cols = ["user_id", "props"]
@@ -3056,7 +3073,7 @@ def q64_stateful_stream_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     import tempfile
 
-    from baskerville_spark.streaming.stateful import incremental_group_stats
+    from baskerville_spark.gates.stateful import incremental_group_stats
 
     e = _t(spark, sf_dir, "events")
     # PRECONDITION for the sum recovery below: mean_value divides by the
@@ -3138,7 +3155,7 @@ def q65_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     express. The DuckDB oracle recomputes the closure with a recursive
     CTE; prefix/suffix fingerprints are defined only for docs with >= 64
     normalized chars (both engines filter identically)."""
-    from baskerville_spark.functions.graph import dedup_clusters
+    from baskerville_spark.gates.graph import dedup_clusters
 
     d = _scan_par(spark, _t(spark, sf_dir, "documents").select("doc_id", "text"))
     did = F.col("doc_id").cast("string")
@@ -3311,7 +3328,7 @@ def q67_chain_clusters_bigstar(spark: SparkSession, sf_dir: str) -> DataFrame:
     and at 10^12 rows. The closed-form oracle needs no recursion: path
     components over consecutive ids are gaps-and-islands (island =
     doc_id - row_number within block), robust to any doc_id gaps."""
-    from baskerville_spark.functions.graph import dedup_clusters
+    from baskerville_spark.gates.graph import dedup_clusters
 
     d = _t(spark, sf_dir, "documents").select("doc_id")
     membership = d.where(F.col("doc_id") % 100 != 99).select(
@@ -3366,7 +3383,7 @@ def q68_incremental_chain_clusters(spark: SparkSession, sf_dir: str) -> DataFram
     final clusters must hash-match the SAME gaps-and-islands oracle as
     the from-scratch q67 run. Both legs use the large-star/small-star
     algorithm (the final graph has diameter ~99)."""
-    from baskerville_spark.functions.graph import (
+    from baskerville_spark.gates.graph import (
         dedup_clusters,
         incremental_membership,
     )
@@ -3425,7 +3442,7 @@ def q69_tfidf_cosine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     singleton weights — the oracle recomputes the full tf·ln(N/df)
     algebra, not a count. Threshold applied to the round-4 value in both
     engines (cross-engine float-stability rule)."""
-    from baskerville_spark.functions.dedup import tfidf_cosine_pairs
+    from baskerville_spark.gates.dedup import tfidf_cosine_pairs
 
     d = _t(spark, sf_dir, "documents").select("doc_id", "text")
     did = F.col("doc_id").cast("string")
@@ -3504,7 +3521,7 @@ def q70_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     ride one pair aggregate; the division is exact small-int rational
     math, identical across engines (no float-stability dance needed
     beyond round-6 output)."""
-    from baskerville_spark.functions.dedup import shingle_containment_pairs
+    from baskerville_spark.gates.dedup import shingle_containment_pairs
 
     d = _scan_par(spark, _t(spark, sf_dir, "documents").select("doc_id", "text"))
     corpus = d.unionByName(
@@ -3566,7 +3583,7 @@ def q71_repetition_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     a way the oracle recomputes exactly. The *_frac ratios are pure
     array algebra (no explode); only top_2gram_frac pays an explode +
     two map-side-combining aggregates."""
-    from baskerville_spark.functions.text import repetition_metrics
+    from baskerville_spark.gates.text import repetition_metrics
 
     d = _scan_par(spark, _t(spark, sf_dir, "documents").select("doc_id", "text"))
     rep = F.array_join(
@@ -3644,7 +3661,7 @@ def q72_char_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate via the ln(n) − Σc·ln(c)/n identity (no per-id window);
     the (doc, char) key space is alphabet-bounded so the shuffle is tiny
     at any document length."""
-    from baskerville_spark.functions.text import char_entropy
+    from baskerville_spark.gates.text import char_entropy
 
     d = _t(spark, sf_dir, "documents").select("doc_id", "text")
     corpus = d.unionByName(
@@ -3698,7 +3715,7 @@ def q73_pii_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
     common subset — no backreferences, no lookaround) and md5s the
     scrubbed text, so replacement ORDER (most-specific first: an SSN
     must not be half-eaten by the phone pattern) is under the hash."""
-    from baskerville_spark.functions.text import pii_scrub
+    from baskerville_spark.gates.text import pii_scrub
 
     d = _scan_par(spark, _t(spark, sf_dir, "documents").select("doc_id", "text"))
     corpus = d.unionByName(
@@ -3827,7 +3844,7 @@ def q74_payload_bytes(spark: SparkSession, sf_dir: str) -> DataFrame:
     truncated uploads / lying headers without decoding. Pure Column
     arithmetic over the metadata projection — no payload scan, one filter,
     no shuffle (the violations listing is a map-side projection)."""
-    from baskerville_spark.checks.consistency import payload_byte_violations
+    from baskerville_spark.gates.consistency import payload_byte_violations
 
     return payload_byte_violations(_meta_clips(spark))
 
@@ -3848,7 +3865,7 @@ def q75_speaking_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     screen run before any ASR verify). ONE conditional-sum aggregate keyed
     on part_id — verdict shape, exercising the verdicts path of
     checks/consistency.py under the oracle (q74 covers the listing path)."""
-    from baskerville_spark.checks.consistency import speaking_rate_verdicts
+    from baskerville_spark.gates.consistency import speaking_rate_verdicts
 
     v = speaking_rate_verdicts(_meta_clips(spark))
     return v.select(
@@ -3885,7 +3902,7 @@ def q76_decontamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc_id%10==7, training = the rest; flag training docs sharing any
     8-gram with the benchmark. Broadcast semi-join on the benchmark's
     distinct shingles — the training corpus never shuffles its text."""
-    from baskerville_spark.functions.dedup import decontaminate
+    from baskerville_spark.gates.dedup import decontaminate
 
     d = _scan_par(spark, _t(spark, sf_dir, "documents").select("doc_id", "text"))
     bench = d.where(F.col("doc_id") % 10 == 7)
@@ -3914,7 +3931,7 @@ def q77_sequence_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
     prefix sum is the two-phase distributed form (range partition -> P-row
     block-total agg -> literal offset map -> per-block window): no
     single-task global Window.orderBy — see functions/packing.py."""
-    from baskerville_spark.functions.packing import pack_sequences, packed_bin_summary
+    from baskerville_spark.gates.packing import pack_sequences, packed_bin_summary
 
     d = _t(spark, sf_dir, "documents").select("doc_id", "text")
     return packed_bin_summary(pack_sequences(d))
@@ -3954,7 +3971,7 @@ def q78_mixture_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     ONE tiny group-count shuffle + a map-side filter; the oracle recomputes
     the group counts, the same IEEE-double rates, and the same 60-bit md5
     bucket, so the exact sampled row SET is under the hash."""
-    from baskerville_spark.functions.sampling import mixture_sample
+    from baskerville_spark.gates.sampling import mixture_sample
 
     d = _t(spark, sf_dir, "documents").select("doc_id", "source")
     return mixture_sample(d, _MIX_WEIGHTS)
@@ -3989,7 +4006,7 @@ def q79_chunk_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     RAG / long-doc preprocessing split. Pure Column algebra (split ->
     sequence -> posexplode -> slice), no shuffle; chunk content is under
     the hash via md5 of the re-joined window."""
-    from baskerville_spark.functions.packing import chunk_documents
+    from baskerville_spark.gates.packing import chunk_documents
 
     d = _t(spark, sf_dir, "documents").select("doc_id", "text")
     return chunk_documents(d)
@@ -4017,7 +4034,7 @@ def q80_vocab_oov(spark: SparkSession, sf_dir: str) -> DataFrame:
     vocab. Count agg with map-side combine absorbs token skew; the vocab
     is TakeOrdered'd (no global sort) and broadcast into the coverage
     join, so the corpus tokens never shuffle by token twice."""
-    from baskerville_spark.functions.text import oov_rate, vocab_top_tokens
+    from baskerville_spark.gates.text import oov_rate, vocab_top_tokens
 
     d = _t(spark, sf_dir, "documents").select("doc_id", "text")
     vocab = vocab_top_tokens(d)
@@ -4056,7 +4073,7 @@ def q81_robust_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     (DuckDB quantile_cont parity); the threshold's float expression is
     written in the SAME op order in both engines so the strict inequality
     bites identically (checks/stats.robust_outlier_violations)."""
-    from baskerville_spark.checks.stats import robust_outlier_violations
+    from baskerville_spark.gates.stats import robust_outlier_violations
 
     e = _t(spark, sf_dir, "events").select("event_id", "event_type", "value")
     return robust_outlier_violations(
@@ -4097,7 +4114,7 @@ def q82_audio_content_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     arithmetic — s%17==5 minus the dup-renamed ids (no clip_s row exists)
     and the mp3-codec drift rows (undecodable, so no transcode copy);
     recall 1.0 and zero false pairs are both under the hash."""
-    from baskerville_spark.functions.audio_dedup import (
+    from baskerville_spark.gates.audio_dedup import (
         audio_content_fingerprints,
         content_duplicate_pairs,
         reencode,
@@ -4152,7 +4169,7 @@ def q83_loudness_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     and the gate emits exact integers plus |measured − analytic| < 1e-9
     booleans (the q46 bounded-verdict pattern); the oracle rebuilds the
     integer columns arithmetically and pins the booleans TRUE."""
-    from baskerville_spark.functions.audio_quality import audio_loudness_stats
+    from baskerville_spark.gates.audio_quality import audio_loudness_stats
 
     def plant(i):
         amp = 500 + (i * 613) % 40000
@@ -4199,7 +4216,7 @@ def q84_spectral_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     integer dominant_bin to its closed form and bounds the centroid
     (|centroid − k| < 1e-6 — leakage-free means numerically-zero mass
     elsewhere). Oracle rebuilds the integers arithmetically."""
-    from baskerville_spark.functions.audio_quality import (
+    from baskerville_spark.gates.audio_quality import (
         SPECTRAL_N_FFT,
         audio_spectral_features,
     )
@@ -4250,7 +4267,7 @@ def q85_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
     now 2k cycles per 256-sample window — dominant_bin doubles, an integer
     the oracle rebuilds arithmetically. Pipeline under test: decode →
     interp → re-encode → decode → rFFT, all Arrow passes."""
-    from baskerville_spark.functions.audio_quality import (
+    from baskerville_spark.gates.audio_quality import (
         SPECTRAL_N_FFT,
         audio_resample,
         audio_spectral_features,
@@ -4301,7 +4318,7 @@ def q86_batched_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     map-side scoring join, per-query rank — ties broken by id so the row
     set is deterministic; ranking happens on RAW doubles (identical
     arithmetic both engines, proven by q14/q22), rounding only on output."""
-    from baskerville_spark.functions.similarity import cosine_topk_batched
+    from baskerville_spark.gates.similarity import cosine_topk_batched
 
     emb = _t(spark, sf_dir, "embeddings")
     queries = emb.where(F.col("vec_id") % 50 == 7)
@@ -4349,7 +4366,7 @@ def q87_downmix(spark: SparkSession, sf_dir: str) -> DataFrame:
     frame counts (total//2, minus an odd-tail truncation case) and the
     dominant bin through the REAL decode → deinterleave → mean → encode →
     decode → rFFT pipeline."""
-    from baskerville_spark.functions.audio_quality import (
+    from baskerville_spark.gates.audio_quality import (
         SPECTRAL_N_FFT,
         audio_downmix,
         audio_spectral_features,
@@ -4421,7 +4438,7 @@ def q88_trim_silence(spark: SparkSession, sf_dir: str) -> DataFrame:
     tail zeros) clips — the trimmed length must equal the body length
     EXACTLY, a pure integer the oracle rebuilds from the same mods. Runs
     the real decode → trim → encode → decode pipeline."""
-    from baskerville_spark.functions.audio_quality import audio_trim_silence
+    from baskerville_spark.gates.audio_quality import audio_trim_silence
 
     trimmed = audio_trim_silence(_q88_q89_clips(spark))
     return au.decode_pass(
@@ -4444,7 +4461,7 @@ def q89_segment(spark: SparkSession, sf_dir: str) -> DataFrame:
     closed form) split into 32-sample windows → per-clip segment count =
     ceil(n/32) and last-segment length = n mod 32 (or 32), both integers
     the oracle rebuilds arithmetically."""
-    from baskerville_spark.functions.audio_quality import audio_segment
+    from baskerville_spark.gates.audio_quality import audio_segment
 
     segs = audio_segment(_q88_q89_clips(spark), segment_samples=32)
     return segs.groupBy("clip_id").agg(
@@ -4489,7 +4506,7 @@ def q90_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     gain -> round -> encode pass, alternating lossless codecs. The
     normalized peak must equal the target EXACTLY (integer), and lengths
     must survive unchanged — both rebuilt arithmetically by the oracle."""
-    from baskerville_spark.functions.audio_quality import audio_normalize
+    from baskerville_spark.gates.audio_quality import audio_normalize
 
     def plant(i):
         amp = 0 if i % 13 == 5 else (i % 317) * 197 + 123
@@ -4517,7 +4534,7 @@ def q91_overlay(spark: SparkSession, sf_dir: str) -> DataFrame:
     drop). Saturating int16 addition gives peak = LEAST(A+B, 32767) and
     length = LEAST(n_a, n_b) — pure integers the oracle rebuilds. Runs the
     real join -> decode both -> mix -> encode pipeline."""
-    from baskerville_spark.functions.audio_quality import audio_overlay
+    from baskerville_spark.gates.audio_quality import audio_overlay
 
     def base(i):
         pcm = np.full((i % 40) + 10, 25000 + (i % 8) * 1000, dtype="<i2")
@@ -4552,7 +4569,7 @@ def q92_pitch(spark: SparkSession, sf_dir: str) -> DataFrame:
     periods p in [4, 42] — the exact-int64 autocorrelation argmax must
     recover p itself (not a harmonic: ties break to the smallest lag, and
     (W-p) > (W-2p) separates the fundamental from its multiples)."""
-    from baskerville_spark.functions.audio_quality import audio_pitch_period
+    from baskerville_spark.gates.audio_quality import audio_pitch_period
 
     def plant(i):
         p = 2 * ((i % 20) + 2)
@@ -4588,7 +4605,7 @@ def q93_bloom_semi(spark: SparkSession, sf_dir: str) -> DataFrame:
     subset (c_custkey % 7 == 0) through bloom-prune -> exact verify; the
     composition must equal DuckDB's plain IN-subquery bit-for-bit (bloom
     false positives all removed by the verify join)."""
-    from baskerville_spark.functions.bloom import bloom_semi_join
+    from baskerville_spark.gates.bloom import bloom_semi_join
 
     orders = _t(spark, sf_dir, "orders")
     dim = _t(spark, sf_dir, "customer").where(F.col("c_custkey") % 7 == 0)
@@ -4616,7 +4633,7 @@ def q94_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     (count + xor + modular-sum of full-row xxhash64, one agg pass per
     snapshot) must classify every partition exactly as DuckDB's literal
     multiset comparison does."""
-    from baskerville_spark.checks.snapshot import snapshot_diff
+    from baskerville_spark.gates.snapshot import snapshot_diff
 
     e = _t(spark, sf_dir, "events").select(
         F.pmod(F.col("user_id"), F.lit(12)).cast("int").alias("part"),
@@ -4701,7 +4718,7 @@ def q95_incremental_revalidation(spark: SparkSession, sf_dir: str) -> DataFrame:
     agg per snapshot; no payload ever shuffles)."""
     import tempfile
 
-    from baskerville_spark.checks.snapshot import partitions_to_revalidate
+    from baskerville_spark.gates.snapshot import partitions_to_revalidate
     from baskerville_spark.generator import GenConfig
     from baskerville_spark.runtime import manifest as manifest_mod
     from baskerville_spark.runtime.runner import ValidationConfig, run_resumable
@@ -4758,7 +4775,7 @@ def q96_rolling_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
     |days|-row self-join. The oracle restates the clamped PSI arithmetic
     in SQL from the same literal edges (q44's proven recipe, but with BOTH
     sides of the comparison data-derived)."""
-    from baskerville_spark.checks.drift import rolling_psi_verdicts
+    from baskerville_spark.gates.drift import rolling_psi_verdicts
 
     e = _t(spark, sf_dir, "events").withColumn(
         "ts", F.col("ts").cast("timestamp")
@@ -4834,7 +4851,7 @@ def q97_rolling_ks(spark: SparkSession, sf_dir: str) -> DataFrame:
     binned two-sample KS statistic instead of PSI (max |CDF_w − CDF_{w−1}|
     over bucket prefix sums; catches bulk CDF shifts PSI's EPS clamping
     mutes). Same one-aggregate + |days|-row self-join plan."""
-    from baskerville_spark.checks.drift import rolling_ks_verdicts
+    from baskerville_spark.gates.drift import rolling_ks_verdicts
 
     e = _t(spark, sf_dir, "events").withColumn(
         "ts", F.col("ts").cast("timestamp")
@@ -4996,8 +5013,8 @@ def q99_keep_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
     clone exists, proving selection is quality-driven, not min-id. The
     oracle re-derives every cluster (prefix groups) and its
     length-then-min-id winner with a window."""
-    from baskerville_spark.functions.dedup import keep_canonical
-    from baskerville_spark.functions.graph import dedup_clusters
+    from baskerville_spark.gates.dedup import keep_canonical
+    from baskerville_spark.gates.graph import dedup_clusters
 
     base = (
         _t(spark, sf_dir, "documents")
@@ -5047,7 +5064,7 @@ def q100_corpus_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     the hash — deterministic md5-bucket thresholds (80/10/10), disjoint
     and exhaustive by construction, reproducible across engines and
     repartitionings (the leak-proofness property seedful randomSplit lacks)."""
-    from baskerville_spark.functions.sampling import train_val_test_split
+    from baskerville_spark.gates.sampling import train_val_test_split
 
     d = _t(spark, sf_dir, "documents")
     return d.select("doc_id", train_val_test_split())
@@ -5077,7 +5094,7 @@ def q101_file_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     invariant in the result: every file's actual in-range match count
     rides along, and a skipped file must show zero (the oracle recomputes
     stats, plan, and counts from the raw rows)."""
-    from baskerville_spark.functions.layout import file_skip_plan
+    from baskerville_spark.gates.layout import file_skip_plan
 
     lo, hi = 20000.0, 30000.0
     li = _t(spark, sf_dir, "lineitem")
@@ -5129,7 +5146,7 @@ def q102_zorder(spark: SparkSession, sf_dir: str) -> DataFrame:
     the interleave with the same shift/AND arithmetic in SQL — bit-exact,
     and the octant histogram pins the clustering behavior, not just the
     per-row math."""
-    from baskerville_spark.functions.layout import z_value
+    from baskerville_spark.gates.layout import z_value
 
     c = _t(spark, sf_dir, "customer")
     z = z_value(F.col("c_custkey") % 256, F.col("c_nationkey"))
@@ -5165,7 +5182,7 @@ def q103_compaction_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     ×100 bigger — the planted 'already big' files that must come out with
     a NULL group). The contiguous prefix-sum grouping must match DuckDB's
     window-cumsum restatement exactly, per partition."""
-    from baskerville_spark.functions.layout import plan_compaction
+    from baskerville_spark.gates.layout import plan_compaction
 
     li = _t(spark, sf_dir, "lineitem")
     files = li.groupBy(
@@ -5219,12 +5236,8 @@ def q104_streaming_rolling_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
     spanning a month boundary must not alias Jan 5 onto Feb 5. The oracle
     is the q96 arithmetic over the same epoch-day windows — streaming
     incrementality cannot change the numbers."""
-    from baskerville_spark.checks.drift import (
-        PSI_THRESHOLD,
-        _clamped_psi,
-        pair_window_counts,
-        rolling_bucket_aggs,
-    )
+    from baskerville_spark.checks.drift import PSI_THRESHOLD, _clamped_psi
+    from baskerville_spark.gates.drift import pair_window_counts, rolling_bucket_aggs
 
     e_schema = _t(spark, sf_dir, "events").schema
     stream = (
@@ -5274,7 +5287,7 @@ def q105_split_on_silence(spark: SparkSession, sf_dir: str) -> DataFrame:
     two tones with exact lengths; when g < 64 the interior pause stays
     inside one segment of length a+g+b. Pure integers from the plant mods,
     through the real decode → split → encode pipeline."""
-    from baskerville_spark.functions.audio_quality import audio_split_on_silence
+    from baskerville_spark.gates.audio_quality import audio_split_on_silence
 
     def plant(i):
         lead, a, g, b, tail = (
@@ -5367,8 +5380,8 @@ def q107_concat_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash equals the original's (compared clip-by-clip through a join of
     the two fingerprint passes; `content_ok` must be all-true under the
     hash gate, lengths rebuilt arithmetically by the oracle)."""
-    from baskerville_spark.functions.audio_dedup import audio_content_fingerprints
-    from baskerville_spark.functions.audio_quality import (
+    from baskerville_spark.gates.audio_dedup import audio_content_fingerprints
+    from baskerville_spark.gates.audio_quality import (
         audio_concat_segments,
         audio_segment,
     )
@@ -5416,7 +5429,7 @@ def q108_enrich_with_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     state columns arriving old_*-prefixed, then the canonical per-column
     coalesce folds prior state into running totals. Hash-gates both the
     join's null semantics and the coalesce arithmetic."""
-    from baskerville_spark.runtime.state import enrich_with_state
+    from baskerville_spark.gates.state import enrich_with_state
 
     ev = _t(spark, sf_dir, "events")
     batch = (
@@ -5487,7 +5500,7 @@ def q109_audio_align(spark: SparkSession, sf_dir: str) -> DataFrame:
     (c) truncated twins (shorter than base: no valid placement) → dropped.
     k_i is a frame multiple except the i%5==2 stratum (k=100+i%3), which
     forces the ±1-frame exact-dot refinement off the coarse grid."""
-    from baskerville_spark.functions.audio_dedup import audio_align_offsets
+    from baskerville_spark.gates.audio_dedup import audio_align_offsets
 
     def plant(i):
         amp = 4000 + (i % 8) * 500
@@ -5547,7 +5560,7 @@ def q110_sensitive_crypto(spark: SparkSession, sf_dir: str) -> DataFrame:
     iv(12)‖ct(len)‖tag(16) — deterministic though the IV is random;
     (c) tamper-probed — permissive decrypt under a DIFFERENT AAD must
     yield NULL (ciphertexts cannot be replayed onto other rows)."""
-    from baskerville_spark.runtime.sensitive import (
+    from baskerville_spark.gates.sensitive import (
         decrypt_columns,
         encrypt_columns,
     )
@@ -5609,7 +5622,7 @@ def q111_bandwidth(spark: SparkSession, sf_dir: str) -> DataFrame:
     5+i%4 and 90+i%5) → 50% each, so the 0.99 threshold lands on the HIGH
     bin; (c) high-band only (bin 80+i%8) → that bin. band_frac =
     rolloff/128 exactly."""
-    from baskerville_spark.functions.audio_quality import audio_bandwidth
+    from baskerville_spark.gates.audio_quality import audio_bandwidth
 
     t = np.arange(256)
 
@@ -5661,7 +5674,7 @@ def q112_gap_fill(spark: SparkSession, sf_dir: str) -> DataFrame:
     up to timegrid.MAX_FILL = 8 slots (longer gaps stay absent — bounded row
     amplification under the hash). value AND event_type carry; is_observed
     marks real vs filled rows."""
-    from baskerville_spark.functions.timegrid import gap_fill
+    from baskerville_spark.gates.timegrid import gap_fill
 
     step = 21600
     ev = _t(spark, sf_dir, "events").select(
@@ -5724,7 +5737,7 @@ def q113_mulaw_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     pcm→mulaw transcoded through the real reencode pipeline and decoded
     back; the quantized value must equal the G.711 segment arithmetic
     (sign·(((v>>(e+3) & 15)·8 + 132)<<e) − 132) restated in SQL."""
-    from baskerville_spark.functions.audio_dedup import reencode
+    from baskerville_spark.gates.audio_dedup import reencode
 
     def plant(i):
         xv = (i * 437) % 65536 - 32768
@@ -5775,7 +5788,7 @@ def q114_bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     repeated 100−4j times) — merges must come out in exact frequency
     order with exact pair counts; merged words collapse to one symbol and
     stop producing pairs, so ranks never interfere."""
-    from baskerville_spark.functions.bpe import train_bpe_merges
+    from baskerville_spark.gates.bpe import train_bpe_merges
 
     docs = spark.range(12).select(
         F.col("id").alias("doc_id"),
@@ -5816,7 +5829,7 @@ def q115_bpe_tokenize(spark: SparkSession, sf_dir: str) -> DataFrame:
     round — then tokenize: trained words collapse to ONE token each
     (n_tokens = repeat count), the untrained word stays characters
     (2 tokens per occurrence)."""
-    from baskerville_spark.functions.bpe import apply_bpe, train_bpe_merges
+    from baskerville_spark.gates.bpe import apply_bpe, train_bpe_merges
 
     docs = spark.range(12).select(
         F.col("id").alias("doc_id"),
@@ -5865,7 +5878,7 @@ def q116_dedup_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
     unique lines each — the owner doc (0) keeps all 4 lines, every other
     doc loses exactly the 2 boilerplate lines, and the reassembled text
     preserves original line order (closed form in both engines)."""
-    from baskerville_spark.functions.dedup import dedup_lines
+    from baskerville_spark.gates.dedup import dedup_lines
 
     docs = spark.range(40).select(
         F.col("id").alias("doc_id"),
@@ -5910,7 +5923,7 @@ def q117_vad_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     utterances, gap excluded from speech), 0 < g < 64 stays one utterance
     WITH the pause counted as speech, g = 0 is one contiguous tone; all
     integers closed-form, speech_frac = exact int/int IEEE division."""
-    from baskerville_spark.functions.audio_quality import audio_vad_stats
+    from baskerville_spark.gates.audio_quality import audio_vad_stats
 
     def plant(i):
         lead, tail = 30 + i % 10, 20 + i % 7
@@ -6398,7 +6411,7 @@ FROM c
 
 
 def q122_audio_decode_state(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from baskerville_spark.checks import audio_state as audio_state_mod
+    from baskerville_spark.gates import audio_state as audio_state_mod
     from baskerville_spark.generator import GenConfig
 
     cfg = GenConfig(n_rows=1000, n_parts=4)
@@ -6582,7 +6595,7 @@ def q124_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     (breaking), n_chars retyped bigint->double (breaking — long->double is
     NOT an Iceberg-legal promotion), quality_score added optional (ok),
     shard_key added required/non-null (breaking)."""
-    from baskerville_spark.checks.evolution import schema_evolution_df
+    from baskerville_spark.gates.evolution import schema_evolution_df
 
     old = _t(spark, sf_dir, "documents")
     new = old.select(
@@ -6622,7 +6635,7 @@ SELECT * FROM (VALUES
 
 
 def q125_partition_completeness(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from baskerville_spark.checks.completeness import (
+    from baskerville_spark.gates.completeness import (
         completeness_verdicts,
         expected_from_snapshot,
     )
@@ -6689,7 +6702,7 @@ FROM obs o FULL OUTER JOIN expected x ON o.partition = x.partition
 
 
 def q126_row_level_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from baskerville_spark.checks.snapshot import row_level_diff
+    from baskerville_spark.gates.snapshot import row_level_diff
 
     e = _t(spark, sf_dir, "events").withColumn(
         "part", F.pmod(F.col("user_id"), F.lit(16)).cast("int")
@@ -6741,7 +6754,7 @@ FROM scoped WHERE part = 2 AND event_id % 13 = 1
 
 
 def q127_psi_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from baskerville_spark.checks.drift import psi_attribution
+    from baskerville_spark.gates.drift import psi_attribution
 
     a = psi_attribution(*_drift_fixture(spark, sf_dir))
     return a.select(
@@ -6802,7 +6815,7 @@ FROM agg""")
 # --------------------------------------------------------------------------
 
 def q128_metric_anomalies(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from baskerville_spark.checks.history import detect_metric_anomalies
+    from baskerville_spark.gates.history import detect_metric_anomalies
 
     d = _t(spark, sf_dir, "documents")
     agg = d.groupBy(
@@ -6902,7 +6915,7 @@ FROM det
 # --------------------------------------------------------------------------
 
 def q129_suggest_constraints(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from baskerville_spark.checks.suggest import suggest_constraints
+    from baskerville_spark.gates.suggest import suggest_constraints
 
     o = _t(spark, sf_dir, "orders")
     src = o.select(
@@ -6983,7 +6996,7 @@ p AS (
 # --------------------------------------------------------------------------
 
 def q130_functional_deps(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from baskerville_spark.checks.suggest import functional_dependency
+    from baskerville_spark.gates.suggest import functional_dependency
 
     o = _t(spark, sf_dir, "orders")
     li = _t(spark, sf_dir, "lineitem")
@@ -7050,7 +7063,7 @@ FROM fd3
 
 
 def q131_dc_offset(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from baskerville_spark.functions.audio_quality import audio_dc_offset
+    from baskerville_spark.gates.audio_quality import audio_dc_offset
 
     def plant(i):
         v = -2000 + (i * 37) % 4001
@@ -7146,7 +7159,7 @@ FROM raw
 
 
 def q133_mannwhitney(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from baskerville_spark.checks.drift import mannwhitney_u
+    from baskerville_spark.gates.drift import mannwhitney_u
 
     li = _t(spark, sf_dir, "lineitem")
     out = mannwhitney_u(li, "l_returnflag", "l_quantity")
@@ -7206,7 +7219,7 @@ FROM pg CROSS JOIN tot
 
 
 def q134_channel_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from baskerville_spark.functions.audio_quality import audio_channel_balance
+    from baskerville_spark.gates.audio_quality import audio_channel_balance
 
     def plant(i):
         a = 400 + (i * 31) % 2000
@@ -7274,7 +7287,7 @@ FROM idx
 
 
 def q135_zipf_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from baskerville_spark.functions.text import zipf_fit
+    from baskerville_spark.checks.stats import zipf_fit
 
     docs = _t(spark, sf_dir, "documents")
     out = zipf_fit(docs, "text")
@@ -7481,7 +7494,7 @@ FROM full_d CROSS JOIN tot
 
 
 def q139_rolling_chi2(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from baskerville_spark.checks.drift import rolling_chi2_verdicts
+    from baskerville_spark.gates.drift import rolling_chi2_verdicts
 
     e = _t(spark, sf_dir, "events").withColumn(
         "ts", F.col("ts").cast("timestamp")
@@ -7539,7 +7552,7 @@ FROM c cur JOIN c prv ON cur.window_id = prv.window_id + 1
 
 
 def q140_token_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from baskerville_spark.functions.sampling import select_within_token_budget
+    from baskerville_spark.gates.sampling import select_within_token_budget
 
     docs = _t(spark, sf_dir, "documents")
     toks = F.size(
@@ -7591,7 +7604,7 @@ FROM t
 
 
 def q141_label_conflicts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from baskerville_spark.functions.audio_dedup import (
+    from baskerville_spark.gates.audio_dedup import (
         conflicting_label_groups,
         reencode,
     )
@@ -7645,7 +7658,7 @@ FROM g CROSS JOIN (VALUES (0), (1)) AS v(m)
 
 
 def q142_wasserstein_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from baskerville_spark.checks.drift import wasserstein_binned
+    from baskerville_spark.gates.drift import wasserstein_binned
 
     ev = _t(spark, sf_dir, "events").where(F.col("value").isNotNull())
     side = (F.col("event_id") % 2) == 0
@@ -7727,7 +7740,7 @@ WHERE tot_a > 0 AND tot_b > 0
 
 
 def q143_partition_spill(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from baskerville_spark.checks.consistency import partition_spill
+    from baskerville_spark.gates.consistency import partition_spill
     from baskerville_spark.generator import GenConfig
 
     cfg = GenConfig(n_rows=1000, n_parts=4)
@@ -7777,7 +7790,7 @@ WHERE s % 23 = 11 AND NOT dup_renamed
 
 
 def q144_out_of_order(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from baskerville_spark.checks.consistency import out_of_order_stats
+    from baskerville_spark.gates.consistency import out_of_order_stats
 
     ev = _t(spark, sf_dir, "events").select(
         "user_id",

@@ -38,7 +38,7 @@ part of its wall time.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from baskerville_spark.checks import sqltext
@@ -47,8 +47,6 @@ from baskerville_spark.checks.stats_state import sketchable_sql
 DEFAULT_QUANTILES = [0.01, 0.05, 0.25, 0.5, 0.75, 0.95, 0.99]
 #: HLL sketch size of ``approx_distinct`` (relative error under 0.02)
 HLL_LG_K = 12
-#: robust z-score above which ``robust_outlier_violations`` flags a value
-OUTLIER_K = 5.0
 
 
 def _stat(col: str, stat: str) -> str:
@@ -175,54 +173,6 @@ def stats_verdicts(
     ).select("part_id", "__v.*")
 
 
-def robust_outlier_violations(
-    df: DataFrame,
-    value_col: str,
-    part_col: str,
-    id_cols: list[str],
-) -> DataFrame:
-    """Median/MAD robust outlier flagging per partition:
-    ``|x − median| > OUTLIER_K · 1.4826 · MAD`` (1.4826 scales MAD to σ under
-    normality — the robust z-score). Mean/stddev-based thresholds (the
-    reference's incident condition, incident_detector.py:285-289) are
-    dragged by the very outliers they hunt; median/MAD has a 50%
-    breakdown point.
-
-    Plan: TWO aggregate passes (median, then MAD of |x−med|), each
-    producing one tiny per-partition row broadcast back — the flag itself
-    is a map-side filter, no row-level shuffle. Uses the EXACT
-    ``percentile`` (DuckDB quantile_cont parity; it buffers each group's
-    values, fine at gate scale) — at 10^12 rows swap ``percentile_approx``,
-    whose rank-error bound is exactly what the q46 sketch-accuracy gate
-    certifies.
-    """
-    v = F.col(value_col).cast("double")
-    base = df.where(v.isNotNull()).select(
-        F.col(part_col).alias("__part"),
-        *[F.col(c) for c in id_cols],
-        v.alias("__x"),
-    )
-    med = base.groupBy("__part").agg(F.percentile(F.col("__x"), 0.5).alias("med"))
-    with_med = base.join(F.broadcast(med), "__part")
-    mad = with_med.groupBy("__part").agg(
-        F.percentile(F.abs(F.col("__x") - F.col("med")), 0.5).alias("mad")
-    )
-    return (
-        with_med.join(F.broadcast(mad), "__part")
-        .where(
-            F.abs(F.col("__x") - F.col("med"))
-            > F.lit(OUTLIER_K) * F.lit(1.4826) * F.greatest(F.col("mad"), F.lit(1e-12))
-        )
-        .select(
-            F.col("__part").alias(part_col),
-            *[F.col(c) for c in id_cols],
-            F.col("__x").alias(value_col),
-            F.round("med", 6).alias("med"),
-            F.round("mad", 6).alias("mad"),
-        )
-    )
-
-
 def benford_digits(df: DataFrame, col: str) -> DataFrame:
     """Benford first-significant-digit analysis of a numeric column: one
     row per digit 1..9 with observed count/fraction, the Benford
@@ -266,4 +216,60 @@ def benford_digits(df: DataFrame, col: str) -> DataFrame:
         obs.cast("double").alias("obs_frac"),
         exp.alias("exp_frac"),
         F.abs(obs - exp).cast("double").alias("abs_dev"),
+    )
+
+
+ZIPF_TOP_K = 500  # most frequent tokens ``zipf_fit`` fits
+
+
+def zipf_fit(df: DataFrame, text_col: str) -> DataFrame:
+    """Zipf power-law fit over the corpus token-frequency curve: OLS of
+    ln(freq) on ln(rank) over the ``ZIPF_TOP_K`` most frequent tokens
+    (whitespace tokens of lower(trim(text)), the q80 vocab convention;
+    ties ranked deterministically by (count DESC, token ASC)).
+
+    One row out: ``(n_ranked, slope, intercept, r2)``. A healthy natural
+    corpus fits ln f ≈ c − s·ln r with s ≈ 1 and high r² (Zipf's law);
+    the fit degrades in ways each tail of the pipeline can cause —
+    boilerplate/template floods flatten the head (s ≪ 1), broken dedup
+    inflates it (s ≫ 1), and a low r² flags a mixture of mismatched
+    sources — making this the one-number corpus-health screen next to
+    the per-document quality features (quality_features) and the
+    vocabulary audit (vocab_oov).
+
+    Scale: the ONLY full-data pass is explode→groupBy(token) with
+    map-side partial aggregation; the rank window runs AFTER a
+    TakeOrdered-style ``orderBy().limit(ZIPF_TOP_K)``, so it orders a
+    frame bounded by ``ZIPF_TOP_K``, never the vocabulary. The OLS sums
+    are one aggregate over those rows.
+    """
+    toks = F.split(F.trim(F.lower(F.col(text_col))), r"\s+")
+    tok = df.select(F.explode(toks).alias("token")).where(F.col("token") != "")
+    counts = tok.groupBy("token").agg(F.count(F.lit(1)).alias("cnt"))
+    top = counts.orderBy(F.desc("cnt"), F.asc("token")).limit(ZIPF_TOP_K)
+    w = Window.orderBy(F.desc("cnt"), F.asc("token"))
+    ranked = top.withColumn("r", F.row_number().over(w))
+    x = F.log(F.col("r").cast("double"))
+    y = F.log(F.col("cnt").cast("double"))
+    s = ranked.agg(
+        F.count(F.lit(1)).cast("double").alias("n"),
+        F.sum(x).alias("sx"),
+        F.sum(y).alias("sy"),
+        F.sum(x * y).alias("sxy"),
+        F.sum(x * x).alias("sxx"),
+        F.sum(y * y).alias("syy"),
+    )
+    n, sx, sy = F.col("n"), F.col("sx"), F.col("sy")
+    sxy, sxx, syy = F.col("sxy"), F.col("sxx"), F.col("syy")
+    cov_n = n * sxy - sx * sy
+    var_x = n * sxx - sx * sx
+    var_y = n * syy - sy * sy
+    slope = F.when(var_x > 0, cov_n / var_x)
+    intercept = F.when(var_x > 0, (sy - (cov_n / var_x) * sx) / n)
+    r2 = F.when((var_x > 0) & (var_y > 0), cov_n * cov_n / (var_x * var_y))
+    return s.select(
+        n.cast("long").alias("n_ranked"),
+        slope.alias("slope"),
+        intercept.alias("intercept"),
+        r2.alias("r2"),
     )

@@ -38,7 +38,7 @@ from pyspark.sql import types as T
 from pyspark.sql.pandas.types import to_arrow_schema
 
 from baskerville_spark import audio
-from baskerville_spark.functions.audio_quality import _per_clip
+from baskerville_spark.gates.audio_quality import _per_clip
 
 FINGERPRINT_SCHEMA = T.StructType(
     [

@@ -3,7 +3,7 @@
 Reference seam: Baskerville has no tokenizer machinery (its text ops are
 request-URL features); this is a from-scratch extension for the
 training-data brief (the brief's "BPE-ish" token counting is the
-INFERENCE side, functions/text.py — this is the TRAINING side that
+INFERENCE side, gates/text.py — this is the TRAINING side that
 produces the merge table those tokenizers run).
 
 Shape (the one real BPE trainers use, distributed): the corpus collapses
@@ -119,7 +119,7 @@ def train_bpe_merges(docs: DataFrame, n_merges: int) -> DataFrame:
 
 def apply_bpe(docs: DataFrame, merges: DataFrame) -> DataFrame:
     """Tokenize with a trained merge table (the inference side of
-    :func:`train_bpe_merges`; functions/text.py's token_count_bpe is the
+    :func:`train_bpe_merges`; gates/text.py's token_count_bpe is the
     regex APPROXIMATION — this is the real thing).
 
     The merge list is a model, not data: bounded by n_merges (32k for a

@@ -30,7 +30,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from baskerville_spark.checks.uniqueness import salted_exemplars
+from baskerville_spark.gates.uniqueness import salted_exemplars
 
 MINHASH_NUM_HASHES = 32  # signature length
 MINHASH_BANDS = 8  # LSH bands of MINHASH_NUM_HASHES // MINHASH_BANDS rows
@@ -69,7 +69,7 @@ def exact_duplicates(
     """Groups of byte-identical texts: (text_hash, dup_count, ids).
 
     ``ids`` holds at most ``exemplar_k`` exemplar ``doc_id``s (the smallest
-    by sort order), aggregated by ``checks.uniqueness.salted_exemplars``
+    by sort order), aggregated by ``gates.uniqueness.salted_exemplars``
     (three bounded levels, 64 salts; see its docstring for the buffer
     bound). Never ships text — only (hash, id).
 

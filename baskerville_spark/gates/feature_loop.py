@@ -36,7 +36,7 @@ Scale notes:
   beyond a single rewrite, partition the cache by a key bucket and
   rewrite only buckets with updates (dynamic partition overwrite —
   runtime/runner.py does this for verdicts).
-- ``streaming/stateful.py`` is the alternative when per-key state fits
+- ``gates/stateful.py`` is the alternative when per-key state fits
   the applyInPandasWithState model; this loop is the one that matches
   the reference's cache semantics exactly.
 """
@@ -47,11 +47,11 @@ from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
-from baskerville_spark.functions.features import (
+from baskerville_spark.gates.features import (
     UpdateSpec,
     update_feature_vector,
 )
-from baskerville_spark.runtime.state import StateStore
+from baskerville_spark.gates.state import StateStore
 
 
 def refresh_feature_cache(

@@ -308,7 +308,7 @@ def update_feature_vector(
     """Merge a batch's fresh feature vectors with the cached past vectors.
 
     Left join from ``current`` (only this batch's keys are updated — cache
-    refresh for untouched keys is ``runtime/state.upsert_state``'s job,
+    refresh for untouched keys is ``gates/state.upsert_state``'s job,
     mirroring the reference split between ``base_spark.py:803-867`` and
     ``request_set_cache.py:370-400``). Keys absent from ``past`` pass the
     current value through unchanged (the ``subset_count == 0`` branch of

@@ -1,6 +1,6 @@
 """Deterministic gradient-boosted stumps: the reference's supervised
 attack labeler (GBM over request-set features) rebuilt with the same
-driver-train / Arrow-score split as ml/iforest.
+driver-train / Arrow-score split as gates/iforest.
 
 Reference shape: a gradient-boosting classifier labels request sets as
 attack/benign after the anomaly stage (SURVEY §2.11 GBM labeler row; the
@@ -29,7 +29,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from baskerville_spark.ml.iforest import MAX_TRAIN_ROWS, training_sample
+from baskerville_spark.gates.iforest import MAX_TRAIN_ROWS, training_sample
 
 LEARNING_RATE = 0.3
 N_ROUNDS = 30  # boosted stumps per model

@@ -10,7 +10,7 @@ pure numpy forest:
   practice — the original paper subsamples ψ=256 rows per tree; the model
   quality comes from the ensemble, not from seeing every row). The sample
   is the same deterministic md5-threshold + ``limit`` capped collect the
-  IVF quantizer uses (functions/similarity.ivf_training_sample rationale):
+  IVF quantizer uses (gates/similarity.ivf_training_sample rationale):
   the driver never receives more than ``MAX_TRAIN_ROWS`` rows regardless of
   corpus size.
 - **Scoring is distributed and vectorized**: the fitted forest (a few
@@ -145,9 +145,9 @@ def training_sample(
 ) -> np.ndarray:
     """Deterministic hash-threshold sample of the feature matrix, HARD-capped
     at ``max_train_rows`` driver-side rows (same bound contract as
-    functions.similarity.ivf_training_sample — one column-pruned count to
+    gates.similarity.ivf_training_sample — one column-pruned count to
     size the threshold, ``limit`` as the backstop)."""
-    from baskerville_spark.functions.sampling import hash_threshold_keep
+    from baskerville_spark.gates.sampling import hash_threshold_keep
 
     base = df.select(id_col, *feature_cols).na.drop(subset=feature_cols)
     n = base.count()

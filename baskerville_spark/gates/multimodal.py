@@ -12,7 +12,7 @@ the codec branch and nothing else changes.
 
 Feature extraction includes an 8x8 average-hash (``ahash``) so image
 near-duplicate detection composes with the SimHash Hamming-band join in
-``functions.dedup.simhash_near_dups`` (same 64-bit + chunks shape).
+``gates.dedup.simhash_near_dups`` (same 64-bit + chunks shape).
 """
 
 from __future__ import annotations

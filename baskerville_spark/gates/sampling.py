@@ -6,8 +6,8 @@ uniform over [0, 1e6) and independent of any structure the ids encode
 partition membership), so ``bucket < frac*1e6`` keeps a deterministic,
 reproducible ~``frac`` of the rows with no RNG and no extra shuffle.
 
-Single source of truth for the expression: ``ml/iforest.training_sample``
-and ``functions/similarity.ivf_training_sample`` both build their HARD-
+Single source of truth for the expression: ``gates/iforest.training_sample``
+and ``gates/similarity.ivf_training_sample`` both build their HARD-
 capped driver samples from this predicate (cap = 0.9-headroom threshold +
 ``limit`` backstop); keeping one copy means their documented "same bound
 contract" cannot silently diverge (round-4 review).

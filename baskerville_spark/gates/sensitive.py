@@ -8,7 +8,7 @@ predictions back on (id_client, uuid) and warns when the merge loses
 rows (postprocessing lag). The client/server split exists so the
 prediction service never sees IPs or hostnames.
 
-Here the stash is a :class:`~baskerville_spark.runtime.state.StateStore`
+Here the stash is a :class:`~baskerville_spark.gates.state.StateStore`
 (the same versioned-parquet + atomic-pointer store the feature cache
 uses; Redis's ``key.column`` maps to ``keys``). No caller sets a TTL, so
 the stash keeps every key until a later batch rewrites it. On a cluster
@@ -30,7 +30,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from baskerville_spark.runtime.state import StateStore
+from baskerville_spark.gates.state import StateStore
 
 
 def split_sensitive(

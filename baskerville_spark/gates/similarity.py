@@ -180,7 +180,7 @@ def ivf_training_sample(df: DataFrame, sample_mod: int, max_train_rows: int) -> 
 
     Costs one column-pruned count() of the corpus to size the threshold.
     """
-    from baskerville_spark.functions.sampling import hash_threshold_keep
+    from baskerville_spark.gates.sampling import hash_threshold_keep
 
     base = df.where(F.col("embedding").isNotNull())
     n = base.count()

@@ -284,59 +284,3 @@ def oov_rate(df: DataFrame, vocab: DataFrame) -> DataFrame:
             F.sum(F.isnull("__in_v").cast("long")) / F.count(F.lit(1)), 6
         ).alias("oov_ratio"),
     )
-
-
-ZIPF_TOP_K = 500  # most frequent tokens ``zipf_fit`` fits
-
-
-def zipf_fit(df: DataFrame, text_col: str) -> DataFrame:
-    """Zipf power-law fit over the corpus token-frequency curve: OLS of
-    ln(freq) on ln(rank) over the ``ZIPF_TOP_K`` most frequent tokens
-    (whitespace tokens of lower(trim(text)), the q80 vocab convention;
-    ties ranked deterministically by (count DESC, token ASC)).
-
-    One row out: ``(n_ranked, slope, intercept, r2)``. A healthy natural
-    corpus fits ln f ≈ c − s·ln r with s ≈ 1 and high r² (Zipf's law);
-    the fit degrades in ways each tail of the pipeline can cause —
-    boilerplate/template floods flatten the head (s ≪ 1), broken dedup
-    inflates it (s ≫ 1), and a low r² flags a mixture of mismatched
-    sources — making this the one-number corpus-health screen next to
-    the per-document quality features (quality_features) and the
-    vocabulary audit (vocab_oov).
-
-    Scale: the ONLY full-data pass is explode→groupBy(token) with
-    map-side partial aggregation; the rank window runs AFTER a
-    TakeOrdered-style ``orderBy().limit(ZIPF_TOP_K)``, so it orders a
-    frame bounded by ``ZIPF_TOP_K``, never the vocabulary. The OLS sums
-    are one aggregate over those rows.
-    """
-    toks = F.split(F.trim(F.lower(F.col(text_col))), r"\s+")
-    tok = df.select(F.explode(toks).alias("token")).where(F.col("token") != "")
-    counts = tok.groupBy("token").agg(F.count(F.lit(1)).alias("cnt"))
-    top = counts.orderBy(F.desc("cnt"), F.asc("token")).limit(ZIPF_TOP_K)
-    w = Window.orderBy(F.desc("cnt"), F.asc("token"))
-    ranked = top.withColumn("r", F.row_number().over(w))
-    x = F.log(F.col("r").cast("double"))
-    y = F.log(F.col("cnt").cast("double"))
-    s = ranked.agg(
-        F.count(F.lit(1)).cast("double").alias("n"),
-        F.sum(x).alias("sx"),
-        F.sum(y).alias("sy"),
-        F.sum(x * y).alias("sxy"),
-        F.sum(x * x).alias("sxx"),
-        F.sum(y * y).alias("syy"),
-    )
-    n, sx, sy = F.col("n"), F.col("sx"), F.col("sy")
-    sxy, sxx, syy = F.col("sxy"), F.col("sxx"), F.col("syy")
-    cov_n = n * sxy - sx * sy
-    var_x = n * sxx - sx * sx
-    var_y = n * syy - sy * sy
-    slope = F.when(var_x > 0, cov_n / var_x)
-    intercept = F.when(var_x > 0, (sy - (cov_n / var_x) * sx) / n)
-    r2 = F.when((var_x > 0) & (var_y > 0), cov_n * cov_n / (var_x * var_y))
-    return s.select(
-        n.cast("long").alias("n_ranked"),
-        slope.alias("slope"),
-        intercept.alias("intercept"),
-        r2.alias("r2"),
-    )

@@ -22,7 +22,7 @@ values (tests/unit/baskerville_tests/features_tests/test_feature_css_total.py:42
 from __future__ import annotations
 
 from dataclasses import dataclass
-from typing import Callable, Iterator
+from typing import Callable, ClassVar, Iterator
 
 import numpy as np
 import pandas as pd
@@ -57,8 +57,8 @@ MP3_MOD, MP3_OFF = 5, 2  # drift-partition rows with an unseen codec
 class GenConfig:
     n_rows: int
     n_parts: int
-    dur_min_ms: int = 50
-    dur_max_ms: int = 500
+    dur_min_ms: ClassVar[int] = 50
+    dur_max_ms: ClassVar[int] = 500
 
 
 def part_of(i: int, cfg: GenConfig) -> int:

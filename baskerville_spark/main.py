@@ -129,7 +129,7 @@ def cmd_profile(args) -> int:
         spearman_corr,
     )
     from baskerville_spark.checks.stats import benford_digits
-    from baskerville_spark.functions.text import zipf_fit
+    from baskerville_spark.checks.stats import zipf_fit
 
     spark = _spark(args)
     df = spark.read.parquet(args.clips)

@@ -1,2 +1,2 @@
 """Resumable validation runtime: the check runner, the partition manifest,
-state stores and metrics."""
+checkpoints and metrics."""

@@ -354,82 +354,85 @@ def run_resumable(
     )
 
     res = run_validation(spark, clips, tref, baseline_rows, cfg=cfg)
+    # however the sink phase ends, the slim cache and the checkpoints go:
+    # a failed write must not leave them in executor storage or on disk
+    try:
+        from baskerville_spark.runtime.metrics import observe_violations
 
-    from baskerville_spark.runtime.metrics import observe_violations
-
-    # Each sink is rebalanced on part_id before the write, so AQE sizes
-    # the write tasks by data volume (one task for a small run) instead of
-    # the inputs' partition counts, where every task pays a fixed closure
-    # deserialization for a handful of rows and one partition scatters
-    # over several files. repartition("part_id") would not do it: over an
-    # input already hash-partitioned on part_id the optimizer drops it.
-    # The violation metrics are observed ABOVE the rebalance: below it,
-    # when a run has no violations, AQE's empty-relation propagation
-    # drops the observing node together with the empty shuffle stage and
-    # the observation never completes.
-    observed, obs = observe_violations(
-        res.violations.hint("rebalance", "part_id")
-    )
-    # Idempotent, fully distributed outputs: partitionBy(part_id) with
-    # DYNAMIC partition overwrite, so a partition retried after a crash
-    # between these writes and the manifest commit REPLACES its previous
-    # files instead of appending duplicate rows. Verdicts never round-trip
-    # through the driver — at 10^6 partitions × ~14 checks a collect() in
-    # the write path is a driver materialization.
-    #
-    # Dynamic overwrite only replaces partitions PRESENT in the new data; a
-    # retried partition whose re-run now yields zero rows for a sink (config
-    # change, partial file set from a mid-write crash) would otherwise keep
-    # its stale files. Deleting the pending partitions' sink subdirectories
-    # first makes retry semantics replace-always, not replace-if-nonempty.
-    # Driver-side metadata calls against the FS only — no data moves.
-    sinks = [("violations", observed)] + [
-        (n, getattr(res, n).hint("rebalance", "part_id"))
-        for n in ("stats", "verdicts", "states") if getattr(res, n) is not None
-    ]
-    _delete_pending_sink_dirs(
-        spark, out_dir, tuple(name for name, _ in sinks), pending
-    )
-
-    # The sink writes are independent jobs over the checkpointed narrow
-    # intermediates — run them CONCURRENTLY so each write's task tail
-    # back-fills the others (guide §2.6); FIFO scheduling keeps this a
-    # latency overlap, not a resource fight. Job descriptions/groups are
-    # thread-local, so the UI labels stay per-sink.
-    def _write(item: tuple) -> None:
-        name, df = item
-        (
-            df.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("part_id")
-            .parquet(f"{out_dir}/{name}")
+        # Each sink is rebalanced on part_id before the write, so AQE sizes
+        # the write tasks by data volume (one task for a small run) instead of
+        # the inputs' partition counts, where every task pays a fixed closure
+        # deserialization for a handful of rows and one partition scatters
+        # over several files. repartition("part_id") would not do it: over an
+        # input already hash-partitioned on part_id the optimizer drops it.
+        # The violation metrics are observed ABOVE the rebalance: below it,
+        # when a run has no violations, AQE's empty-relation propagation
+        # drops the observing node together with the empty shuffle stage and
+        # the observation never completes.
+        observed, obs = observe_violations(
+            res.violations.hint("rebalance", "part_id")
+        )
+        # Idempotent, fully distributed outputs: partitionBy(part_id) with
+        # DYNAMIC partition overwrite, so a partition retried after a crash
+        # between these writes and the manifest commit REPLACES its previous
+        # files instead of appending duplicate rows. Verdicts never round-trip
+        # through the driver — at 10^6 partitions × ~14 checks a collect() in
+        # the write path is a driver materialization.
+        #
+        # Dynamic overwrite only replaces partitions PRESENT in the new data; a
+        # retried partition whose re-run now yields zero rows for a sink (config
+        # change, partial file set from a mid-write crash) would otherwise keep
+        # its stale files. Deleting the pending partitions' sink subdirectories
+        # first makes retry semantics replace-always, not replace-if-nonempty.
+        # Driver-side metadata calls against the FS only — no data moves.
+        sinks = [("violations", observed)] + [
+            (n, getattr(res, n).hint("rebalance", "part_id"))
+            for n in ("stats", "verdicts", "states") if getattr(res, n) is not None
+        ]
+        _delete_pending_sink_dirs(
+            spark, out_dir, tuple(name for name, _ in sinks), pending
         )
 
-    # Per-partition manifest metrics from the verdict plan itself, which
-    # reads only the checkpoints; it runs in the same pool as
-    # the writes instead of reading the verdicts sink back afterwards.
-    def _manifest_metrics() -> list:
-        return (
-            res.verdicts.groupBy("part_id")
-            .agg(F.max("n_rows"), F.sum("n_violations"))
-            .collect()
-        )
+        # The sink writes are independent jobs over the checkpointed narrow
+        # intermediates — run them CONCURRENTLY so each write's task tail
+        # back-fills the others (guide §2.6); FIFO scheduling keeps this a
+        # latency overlap, not a resource fight. Job descriptions/groups are
+        # thread-local, so the UI labels stay per-sink.
+        def _write(item: tuple) -> None:
+            name, df = item
+            (
+                df.write.mode("overwrite")
+                .option("partitionOverwriteMode", "dynamic")
+                .partitionBy("part_id")
+                .parquet(f"{out_dir}/{name}")
+            )
 
-    with ThreadPoolExecutor(max_workers=len(sinks) + 1) as pool:
-        per_part_rows = pool.submit(_manifest_metrics)
-        list(pool.map(_write, sinks))
-        per_part = {
-            int(p): (n_rows or 0, n_viol or 0)
-            for p, n_rows, n_viol in per_part_rows.result()
-        }
-    run_metrics = dict(obs.get)  # side effect of the violations write
+        # Per-partition manifest metrics from the verdict plan itself, which
+        # reads only the checkpoints; it runs in the same pool as
+        # the writes instead of reading the verdicts sink back afterwards.
+        def _manifest_metrics() -> list:
+            return (
+                res.verdicts.groupBy("part_id")
+                .agg(F.max("n_rows"), F.sum("n_violations"))
+                .collect()
+            )
 
-    for p in pending:
-        n_rows, n_viol = per_part.get(int(p), (0, 0))
-        manifest_mod.commit_partition(
-            manifest_path, int(p), int(n_rows), int(n_viol), started
-        )
-    res.unpersist()
+        with ThreadPoolExecutor(max_workers=len(sinks) + 1) as pool:
+            per_part_rows = pool.submit(_manifest_metrics)
+            list(pool.map(_write, sinks))
+            per_part = {
+                int(p): (n_rows or 0, n_viol or 0)
+                for p, n_rows, n_viol in per_part_rows.result()
+            }
+        run_metrics = dict(obs.get)  # side effect of the violations write
+
+        for p in pending:
+            n_rows, n_viol = per_part.get(int(p), (0, 0))
+            manifest_mod.commit_partition(
+                manifest_path, int(p), int(n_rows), int(n_viol), started
+            )
+    finally:
+        res.unpersist()
     processed = [int(p) for p in pending]
     print(
         json.dumps({"processed": processed, "metrics": run_metrics}),

@@ -18,16 +18,6 @@ python bench.py --only NAME...
     Times just the named gates and prints {"queries": ..., "failed": ...}.
     An unknown name is an error.
 
-python bench.py --scaling
-    Generates one table of $SCALING_CLIPS clips of 500-3000 ms, then times
-    the audio decode + SNR stage over it at N and 4N cores (default
-    nproc/4 and nproc; SCALING_PAIR=N,M overrides), each level in its own
-    process, and prints throughput at both plus the scaling efficiency.
-
-python bench.py --clips-only CPUS TABLE_DIR
-    Internal to --scaling: times the decode stage over an existing table at
-    local[CPUS] and prints the clip-pass dict.
-
 Honesty measures (this box hosts co-tenants and timings vary 2-6x):
 - an untimed warm-up absorbs JVM C2/codegen + python-worker spawn before
   ANY timed work, for the gates and for the clip pass alike;
@@ -44,7 +34,6 @@ import argparse
 import json
 import os
 import statistics
-import subprocess
 import sys
 import tempfile
 import time
@@ -58,28 +47,6 @@ CPUS = os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count() or 8))
 BENCH_CLIPS = int(os.environ.get("BENCH_CLIPS", "100000"))
 BENCH_PARTS = int(os.environ.get("BENCH_PARTS", "16"))
 BENCH_TRIALS = int(os.environ.get("BENCH_TRIALS", "3"))
-# 80k default: at 40k the fixed per-trial setup cost (~1.5-2 s of scan
-# planning + python-worker spawn) is 3x better amortized on the 2-core leg
-# and caps measured 2->8 efficiency near 0.78; at 80k the same engine
-# measures 0.94-1.02 (docs/scaling_r03/run8-9). Efficiency rises with work
-# volume — benchmark at the volume that isolates the engine, not the floor.
-SCALING_CLIPS = int(os.environ.get("SCALING_CLIPS", "80000"))
-# realistic clip durations for scaling runs so decode dominates scheduling
-SCALING_DUR = (500, 3000)
-
-
-def default_scaling_pair(n_cores: int) -> tuple[int, int]:
-    """N and 4N cores for the scaling pair, with 4N = every core the host
-    has: a pair above the host's core count measures oversubscription, not
-    scaling."""
-    return (max(1, n_cores // 4), n_cores)
-
-
-SCALING_PAIR = (
-    tuple(int(x) for x in os.environ["SCALING_PAIR"].split(","))
-    if "SCALING_PAIR" in os.environ
-    else default_scaling_pair(len(os.sched_getaffinity(0)))
-)
 
 
 def _materialize(df) -> int:
@@ -97,27 +64,22 @@ def write_table(spark, root: str, cfg) -> None:
     write_transcript_ref(spark, f"{root}/tref", cfg)
 
 
-def _timed_suite(spark, clips, tref, baseline, suite: str) -> float:
-    """One timed validation pass; returns elapsed seconds. ``decode`` times
-    the audio decode + SNR stage only, ``full`` the whole check suite."""
-    from baskerville_spark.checks import invariants as inv_mod
+def _timed_suite(spark, clips, tref, baseline) -> float:
+    """One timed pass of the whole check suite; returns elapsed seconds."""
     from baskerville_spark.runtime.runner import ValidationConfig, run_validation
 
     t0 = time.time()
-    if suite == "decode":
-        _materialize(inv_mod.audio_invariant(clips, tref))
-    else:
-        res = run_validation(spark, clips, tref, baseline, cfg=ValidationConfig())
-        res.verdicts.count()
-        res.violations.count()
-        res.unpersist()
+    res = run_validation(spark, clips, tref, baseline, cfg=ValidationConfig())
+    res.verdicts.count()
+    res.violations.count()
+    res.unpersist()
     return time.time() - t0
 
 
-def clip_pass(spark, root: str, trials: int, suite: str) -> dict:
+def clip_pass(spark, root: str, trials: int) -> dict:
     """Validated clips/sec over the table ``write_table`` left at ``root``.
 
-    The timed window is the ``suite`` reading from disk — the production
+    The timed window is the check suite reading from disk — the production
     shape; generation is not timed. Reports the MEDIAN of ``trials`` timed
     passes with per-trial loadavg, so one co-tenant burst doesn't define
     the number.
@@ -136,12 +98,12 @@ def clip_pass(spark, root: str, trials: int, suite: str) -> dict:
     # warm); the repartition makes sure EVERY core's python worker spawns.
     par = spark.sparkContext.defaultParallelism
     warm_slice = clips.where("part_id = 0").repartition(par)
-    _timed_suite(spark, warm_slice, tref, baseline, suite)
+    _timed_suite(spark, warm_slice, tref, baseline)
 
     runs = []
     for _ in range(max(1, trials)):
         load0 = os.getloadavg()[0]
-        el = _timed_suite(spark, clips, tref, baseline, suite)
+        el = _timed_suite(spark, clips, tref, baseline)
         runs.append(
             {
                 "elapsed_s": round(el, 3),
@@ -156,7 +118,6 @@ def clip_pass(spark, root: str, trials: int, suite: str) -> dict:
     rates = [r["clips_per_sec"] for r in runs]
     return {
         "n_clips": n_clips,
-        "suite": suite,
         "elapsed_s": round(med, 3),
         "clips_per_sec": round(n_clips / med, 1),
         "clips_per_sec_min": min(rates),
@@ -221,7 +182,7 @@ def run_default(only: list[str] | None = None) -> None:
 
     with tempfile.TemporaryDirectory(prefix="bench_clips_") as root:
         write_table(spark, root, GenConfig(n_rows=BENCH_CLIPS, n_parts=BENCH_PARTS))
-        clip = clip_pass(spark, root, BENCH_TRIALS, "full")
+        clip = clip_pass(spark, root, BENCH_TRIALS)
     # headline = queries + ONE logical clip pass (the median trial), so the
     # value is comparable across rounds regardless of BENCH_TRIALS; the
     # per-trial detail lives in clip_bench. metric_version marks the change
@@ -258,105 +219,16 @@ def run_default(only: list[str] | None = None) -> None:
     )
 
 
-def run_clips_only(cpus: int, root: str) -> None:
-    from baskerville_spark.session import get_session
-
-    spark = get_session(
-        f"bench-clips-{cpus}", master=f"local[{cpus}]", shuffle_partitions=cpus
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-    clip = clip_pass(spark, root, BENCH_TRIALS, "decode")
-    clip["cpus"] = cpus
-    print(json.dumps(clip))
-
-
-def run_scaling() -> None:
-    """N vs 4N cores on identical input → throughput + scaling efficiency.
-
-    The table is generated ONCE at full parallelism; each level then times
-    it in its own warm process (a fresh JVM per trial re-pays C2/codegen +
-    cold page cache — measured 30-50%). Best-of-BENCH_TRIALS per level:
-    this box hosts co-tenants that burst 4-15 cores at random, so single
-    samples under-report the 4N level badly; min-elapsed is the
-    least-interference sample. Loadavg is recorded alongside for honesty.
-    """
-    from baskerville_spark.generator import GenConfig
-    from baskerville_spark.session import get_session
-
-    n_lo, n_hi = SCALING_PAIR
-    results: dict[int, dict] = {}
-    with tempfile.TemporaryDirectory(prefix="bench_scaling_") as root:
-        gen_spark = get_session("bench-gen", master="local[*]")
-        gen_spark.sparkContext.setLogLevel("ERROR")
-        write_table(gen_spark, root, GenConfig(
-            n_rows=SCALING_CLIPS, n_parts=BENCH_PARTS,
-            dur_min_ms=SCALING_DUR[0], dur_max_ms=SCALING_DUR[1],
-        ))
-        gen_spark.stop()
-
-        for cpus in (n_hi, n_lo):
-            out = subprocess.run(
-                [sys.executable, os.path.abspath(__file__),
-                 "--clips-only", str(cpus), root],
-                capture_output=True,
-                text=True,
-            )
-            if out.returncode != 0:
-                # surface the subprocess failure instead of a bare
-                # CalledProcessError with captured (invisible) stderr
-                print(out.stderr[-4000:], file=sys.stderr)
-                raise RuntimeError(
-                    f"--clips-only {cpus} failed (exit {out.returncode})"
-                )
-            line = [l for l in out.stdout.strip().splitlines() if l.startswith("{")][-1]
-            trials = json.loads(line)["trials"]
-            best = min(trials, key=lambda t: t["elapsed_s"])
-            results[cpus] = {
-                "cpus": cpus,
-                "trials": trials,
-                "elapsed_s": best["elapsed_s"],
-                "clips_per_sec": best["clips_per_sec"],
-            }
-    t_lo, t_hi = results[n_lo]["clips_per_sec"], results[n_hi]["clips_per_sec"]
-    eff = (t_hi / t_lo) / (n_hi / n_lo)
-    print(
-        json.dumps(
-            {
-                "metric": f"scaling_efficiency_{n_lo}_to_{n_hi}_cores",
-                "value": round(eff, 3),
-                "unit": "ratio",
-                "suite": "decode",
-                "throughput_n": t_lo,
-                "throughput_4n": t_hi,
-                "n_clips": SCALING_CLIPS,
-                "clip_dur_ms": list(SCALING_DUR),
-                "detail": results,
-            }
-        )
-    )
-
-
 def main(argv: list[str] | None = None) -> None:
     p = argparse.ArgumentParser(
         allow_abbrev=False,
         description="Gate timings + clip-validation throughput (default), "
-        "or one of the modes below."
+        "or just the named gates (--only)."
     )
-    mode = p.add_mutually_exclusive_group()
-    mode.add_argument("--only", nargs="+", metavar="NAME",
-                      help="time just the named gates; no clip pass")
-    mode.add_argument("--scaling", action="store_true",
-                      help="decode throughput at N and 4N cores")
-    mode.add_argument("--clips-only", nargs=2, metavar=("CPUS", "TABLE_DIR"),
-                      help="internal to --scaling: time one level")
+    p.add_argument("--only", nargs="+", metavar="NAME",
+                   help="time just the named gates; no clip pass")
     args = p.parse_args(argv)
-    if args.scaling:
-        run_scaling()
-    elif args.clips_only:
-        cpus, root = args.clips_only
-        run_clips_only(int(cpus), root)
-    else:
-        run_default(args.only)
+    run_default(args.only)
 
 
 if __name__ == "__main__":

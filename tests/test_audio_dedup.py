@@ -1,4 +1,4 @@
-"""Content-based audio dedup (functions/audio_dedup.py)."""
+"""Content-based audio dedup (gates/audio_dedup.py)."""
 
 from __future__ import annotations
 
@@ -7,7 +7,7 @@ from pyspark.sql import Row
 from pyspark.sql import functions as F
 
 from baskerville_spark import audio
-from baskerville_spark.functions.audio_dedup import (
+from baskerville_spark.gates.audio_dedup import (
     audio_content_fingerprints,
     content_duplicate_pairs,
     envelope_fingerprint,
@@ -96,7 +96,7 @@ def test_reencode_round_trip(spark):
 
 
 def test_audio_loudness_stats(spark):
-    from baskerville_spark.functions.audio_quality import audio_loudness_stats
+    from baskerville_spark.gates.audio_quality import audio_loudness_stats
 
     half = np.full(200, 16384, dtype=np.int16)          # -6.02 dBFS
     clipped = np.full(100, 32767, dtype=np.int16)       # full scale
@@ -120,7 +120,7 @@ def test_audio_loudness_stats(spark):
 
 
 def test_audio_spectral_features(spark):
-    from baskerville_spark.functions.audio_quality import audio_spectral_features
+    from baskerville_spark.gates.audio_quality import audio_spectral_features
 
     n_fft, sr = 256, 16000
     t = np.arange(400)
@@ -142,7 +142,7 @@ def test_audio_spectral_features(spark):
 
 
 def test_audio_resample(spark):
-    from baskerville_spark.functions.audio_quality import audio_resample
+    from baskerville_spark.gates.audio_quality import audio_resample
 
     pcm = audio.synth_pcm("r", 16000, 400)  # 6400 samples
     rows = [
@@ -161,7 +161,7 @@ def test_audio_resample(spark):
 
 
 def test_audio_downmix(spark):
-    from baskerville_spark.functions.audio_quality import audio_downmix
+    from baskerville_spark.gates.audio_quality import audio_downmix
 
     left = np.array([100, 200, -300, 32767], dtype=np.int16)
     right = np.array([300, -200, -300, 32767], dtype=np.int16)
@@ -184,7 +184,7 @@ def test_audio_downmix(spark):
 
 
 def test_audio_trim_silence(spark):
-    from baskerville_spark.functions.audio_quality import audio_trim_silence
+    from baskerville_spark.gates.audio_quality import audio_trim_silence
 
     pcm = np.concatenate([
         np.zeros(10, dtype=np.int16),
@@ -203,7 +203,7 @@ def test_audio_trim_silence(spark):
 
 
 def test_audio_segment(spark):
-    from baskerville_spark.functions.audio_quality import audio_segment
+    from baskerville_spark.gates.audio_quality import audio_segment
 
     pcm = audio.synth_pcm("seg", 16000, 100)  # 1600 samples
     rows = [Row(part_id=0, clip_id="seg",
@@ -221,7 +221,7 @@ def test_audio_segment(spark):
 
 
 def test_audio_normalize(spark):
-    from baskerville_spark.functions.audio_quality import audio_normalize
+    from baskerville_spark.gates.audio_quality import audio_normalize
 
     rows = [
         # attenuation: peak 30000 -> 20000; zero sample stays zero
@@ -247,7 +247,7 @@ def test_audio_normalize(spark):
 
 
 def test_audio_overlay(spark):
-    from baskerville_spark.functions.audio_quality import audio_overlay
+    from baskerville_spark.gates.audio_quality import audio_overlay
 
     base_rows = [
         Row(part_id=0, clip_id="a",
@@ -279,7 +279,7 @@ def test_audio_overlay_mixed_codecs(spark):
     """pcm base + flac overlay: the overlay must be decoded with ITS OWN
     codec (the old code used the base row's codec, silently producing
     garbage mixes for mixed-codec pairs — round-4 advisor finding)."""
-    from baskerville_spark.functions.audio_quality import audio_overlay
+    from baskerville_spark.gates.audio_quality import audio_overlay
 
     base_pcm = np.array([100, -200, 300], dtype=np.int16)
     over_pcm = np.array([11, 22, -33], dtype=np.int16)
@@ -311,7 +311,7 @@ def test_audio_overlay_mixed_codecs(spark):
 
 
 def test_resample_requires_sr_column(spark):
-    from baskerville_spark.functions.audio_quality import audio_resample
+    from baskerville_spark.gates.audio_quality import audio_resample
 
     df = spark.createDataFrame(
         [Row(clip_id="x", bytes=b"\x00\x00", codec="pcm_s16le")]
@@ -323,7 +323,7 @@ def test_resample_requires_sr_column(spark):
 
 
 def test_segment_rejects_already_segmented_input(spark):
-    from baskerville_spark.functions.audio_quality import audio_segment
+    from baskerville_spark.gates.audio_quality import audio_segment
 
     pcm = audio.synth_pcm("seg", 16000, 150)
     rows = [Row(part_id=0, clip_id="seg",
@@ -336,7 +336,7 @@ def test_segment_rejects_already_segmented_input(spark):
 
 
 def test_audio_pitch_period(spark):
-    from baskerville_spark.functions.audio_quality import audio_pitch_period
+    from baskerville_spark.gates.audio_quality import audio_pitch_period
 
     t = np.arange(512)
     rows = []
@@ -353,7 +353,7 @@ def test_audio_pitch_period(spark):
 
 
 def test_audio_split_on_silence(spark):
-    from baskerville_spark.functions.audio_quality import audio_split_on_silence
+    from baskerville_spark.gates.audio_quality import audio_split_on_silence
 
     tone = np.full(10, 5000, dtype=np.int16)
     gap = np.zeros(64, dtype=np.int16)      # qualifying break
@@ -383,7 +383,7 @@ def test_audio_split_on_silence(spark):
 
 
 def test_audio_concat_segments_roundtrip(spark):
-    from baskerville_spark.functions.audio_quality import (
+    from baskerville_spark.gates.audio_quality import (
         audio_concat_segments,
         audio_segment,
     )
@@ -404,7 +404,7 @@ def test_audio_align_offsets(spark):
     """Offset recovery: delay copies at frame and NON-frame offsets, a
     rescaled copy (exact rational ratio), a cross-codec twin, and the two
     drop contracts (shorter twin, silent base)."""
-    from baskerville_spark.functions.audio_dedup import audio_align_offsets
+    from baskerville_spark.gates.audio_dedup import audio_align_offsets
 
     base = np.r_[
         np.full(100, 3000, dtype=np.int16),
@@ -467,7 +467,7 @@ def test_audio_align_offsets(spark):
 
 def test_audio_bandwidth(spark):
     """Rolloff: full-band vs band-limited vs silent vs short (zero-pad)."""
-    from baskerville_spark.functions.audio_quality import audio_bandwidth
+    from baskerville_spark.gates.audio_quality import audio_bandwidth
 
     t = np.arange(256)
 
@@ -507,8 +507,8 @@ def test_payload_ops_fail_loudly_on_missing_columns(spark):
     missing required column, and treat part_id as genuinely optional."""
     import pytest
 
-    from baskerville_spark.functions.audio_dedup import audio_content_fingerprints
-    from baskerville_spark.functions.audio_quality import (
+    from baskerville_spark.gates.audio_dedup import audio_content_fingerprints
+    from baskerville_spark.gates.audio_quality import (
         audio_bandwidth,
         audio_loudness_stats,
         audio_pitch_period,
@@ -535,7 +535,7 @@ def test_payload_ops_fail_loudly_on_missing_columns(spark):
 def test_audio_vad_stats(spark):
     """VAD summary: split vs kept pause, all-silent zeros (reported, not
     dropped), semantics shared with audio_split_on_silence."""
-    from baskerville_spark.functions.audio_quality import (
+    from baskerville_spark.gates.audio_quality import (
         audio_split_on_silence,
         audio_vad_stats,
     )
@@ -570,7 +570,7 @@ def test_audio_vad_stats(spark):
 
 
 def test_audio_dc_offset(spark, monkeypatch):
-    from baskerville_spark.functions.audio_quality import audio_dc_offset
+    from baskerville_spark.gates.audio_quality import audio_dc_offset
 
     # square wave around +1000: mean exactly 1000, suspect (1000/32768 > 2%)
     biased = np.empty(100, dtype=np.int16)
@@ -596,7 +596,7 @@ def test_audio_dc_offset(spark, monkeypatch):
 
     # the policy threshold is a Column, not baked into the Arrow pass:
     # tightening it flips the verdict without touching the decode path
-    from baskerville_spark.functions import audio_quality as AQ
+    from baskerville_spark.gates import audio_quality as AQ
 
     monkeypatch.setattr(AQ, "DC_SUSPECT_FRAC", 0.005)
     tight = {r["clip_id"]: r for r in
@@ -626,7 +626,7 @@ def test_audio_dc_offset(spark, monkeypatch):
 
 
 def test_audio_channel_balance(spark):
-    from baskerville_spark.functions.audio_quality import audio_channel_balance
+    from baskerville_spark.gates.audio_quality import audio_channel_balance
 
     def interleave(l_ch, r_ch):
         x = np.empty(len(l_ch) * 2, dtype="<i2")
@@ -671,7 +671,7 @@ def test_audio_channel_balance(spark):
 
 
 def test_conflicting_label_groups(spark):
-    from baskerville_spark.functions.audio_dedup import conflicting_label_groups
+    from baskerville_spark.gates.audio_dedup import conflicting_label_groups
 
     pcm_a = audio.synth_pcm("lblA", 8000, 80)
     pcm_b = audio.synth_pcm("lblB", 8000, 80)
@@ -709,7 +709,7 @@ def test_conflicting_label_groups(spark):
 def test_conflicting_label_groups_caches_decode_pass(spark):
     """The labeled (content_md5, clip_id, transcript) frame is persisted:
     the member back-join must read the cache, not re-run the decode pass."""
-    from baskerville_spark.functions.audio_dedup import conflicting_label_groups
+    from baskerville_spark.gates.audio_dedup import conflicting_label_groups
 
     pcm = audio.synth_pcm("lblC", 8000, 80)
     df = spark.createDataFrame(

@@ -91,10 +91,10 @@ def _rows(df) -> list[dict]:
 
 def edge_outputs(spark) -> dict:
     """{operator label: {"schema": ..., "rows": [...]}} on the edge table."""
-    from baskerville_spark.checks import audio_state as AS
+    from baskerville_spark.gates import audio_state as AS
     from baskerville_spark.checks import invariants as INV
-    from baskerville_spark.functions import audio_dedup as AD
-    from baskerville_spark.functions import audio_quality as AQ
+    from baskerville_spark.gates import audio_dedup as AD
+    from baskerville_spark.gates import audio_quality as AQ
 
     clips = spark.createDataFrame(_edge_rows(), _COLS)
     no_part = clips.drop("part_id")

@@ -4,17 +4,11 @@ strictly; each mode prints the lines its consumers read."""
 from __future__ import annotations
 
 import json
-import os
-import subprocess
-import sys
-from pathlib import Path
 from types import SimpleNamespace
 
 import pytest
 
 import bench
-
-BENCH = Path(bench.__file__)
 
 
 def test_time_gates_returns_failed_gate(monkeypatch):
@@ -53,11 +47,6 @@ def test_only_rejects_unknown_gate():
         bench.run_default(["q21_clip_validation", "q00_missing"])
 
 
-def test_default_scaling_pair_fits_the_host():
-    assert bench.default_scaling_pair(4) == (1, 4)
-    assert bench.default_scaling_pair(32) == (8, 32)
-
-
 @pytest.mark.parametrize(
     "argv", [["--skew"], ["--scalling"], ["--scal"], ["--help-me"], ["--only"]]
 )
@@ -94,12 +83,12 @@ def test_default_run_prints_map_line_then_headline(monkeypatch, capsys):
     monkeypatch.setattr(entry_mod, "queries", lambda: {"ok": ok, "boom": boom})
     monkeypatch.setattr(bench, "_materialize", lambda df: None)
     monkeypatch.setattr(bench, "write_table", lambda spark, root, cfg: None)
-    suites = []
+    passes = []
     clip = {"elapsed_s": 2.0, "clips_per_sec": 50.0,
             "clips_per_sec_min": 40.0, "clips_per_sec_max": 60.0}
 
-    def clip_pass(spark, root, trials, suite):
-        suites.append(suite)
+    def clip_pass(spark, root, trials):
+        passes.append(trials)
         return clip
 
     monkeypatch.setattr(bench, "clip_pass", clip_pass)
@@ -109,7 +98,7 @@ def test_default_run_prints_map_line_then_headline(monkeypatch, capsys):
     map_line, headline = [
         json.loads(x) for x in capsys.readouterr().out.splitlines()
     ]
-    assert suites == ["full"]
+    assert passes == [bench.BENCH_TRIALS]
     assert sorted(map_line) == ["clip_bench", "cpus", "failed", "queries", "sf"]
     assert map_line["queries"]["boom"] == -1.0
     assert list(map_line["queries"]) == ["ok", "boom"]
@@ -119,23 +108,3 @@ def test_default_run_prints_map_line_then_headline(monkeypatch, capsys):
     assert headline["n_queries"] == 2
     assert "per_query_file" not in headline
 
-
-def test_clips_only_times_an_existing_table(spark, tmp_path):
-    from baskerville_spark.generator import GenConfig
-
-    bench.write_table(spark, str(tmp_path), GenConfig(n_rows=200, n_parts=2))
-    out = subprocess.run(
-        [sys.executable, str(BENCH), "--clips-only", "1", str(tmp_path)],
-        capture_output=True,
-        text=True,
-        env={**os.environ, "BENCH_TRIALS": "1"},
-        timeout=300,
-    )
-    assert out.returncode == 0, out.stderr[-4000:]
-    lines = out.stdout.splitlines()
-    assert len(lines) == 1
-    clip = json.loads(lines[0])
-    assert clip["n_clips"] == 200
-    assert clip["suite"] == "decode"
-    assert clip["cpus"] == 1
-    assert len(clip["trials"]) == 1

@@ -11,13 +11,10 @@ import pytest
 
 from baskerville_spark.checks import sqltext
 from baskerville_spark.checks.referential import ref_integrity_violations
-from baskerville_spark.checks.schema_check import (
-    ColumnSpec,
-    enforce_schema,
-    pattern_violations,
-)
+from baskerville_spark.checks.schema_check import pattern_violations
 from baskerville_spark.checks.stats import column_stats
 from baskerville_spark.checks.uniqueness import duplicate_keys
+from baskerville_spark.gates.schema_check import ColumnSpec, enforce_schema
 from baskerville_spark.generator import expected_violation_indices
 from oracles import naive_duplicate_keys
 
@@ -37,8 +34,8 @@ def test_salted_equals_naive_uniqueness(t1_clips):
 def test_duplicate_exemplars_bounded_under_skew(spark, monkeypatch):
     from pyspark.sql import functions as F
 
-    from baskerville_spark.checks import uniqueness
-    from baskerville_spark.checks.uniqueness import duplicate_exemplars
+    from baskerville_spark.gates import uniqueness
+    from baskerville_spark.gates.uniqueness import duplicate_exemplars
 
     # one key duplicated 50k times + unique tail
     df = spark.range(60_000).select(
@@ -342,8 +339,8 @@ def test_duplicate_exemplars_reports_null_keys(spark, monkeypatch):
     """A duplicated NULL key is a data-quality violation this check must
     report: groupBy treats NULL as one group, and the count-first semi
     join is null-safe (a plain equi semi-join would silently drop it)."""
-    from baskerville_spark.checks import uniqueness
-    from baskerville_spark.checks.uniqueness import duplicate_exemplars
+    from baskerville_spark.gates import uniqueness
+    from baskerville_spark.gates.uniqueness import duplicate_exemplars
 
     df = spark.createDataFrame(
         [(None, 1), (None, 2), (None, 3), ("a", 4), ("a", 5), ("b", 6)],
@@ -367,7 +364,7 @@ def test_snapshot_diff_statuses(spark):
     from pyspark.sql import Row
     from pyspark.sql import functions as F
 
-    from baskerville_spark.checks.snapshot import (
+    from baskerville_spark.gates.snapshot import (
         partitions_to_revalidate,
         snapshot_diff,
     )
@@ -685,7 +682,7 @@ def test_histogram_state_single_pass_plan(spark):
     assert "partial_sum" in plan or "partial sum" in plan.lower(), plan[:2000]
 
 
-# -- mergeable decode state (checks/audio_state.py) ---------------------------
+# -- mergeable decode state (gates/audio_state.py) ---------------------------
 
 
 def _clip_rows(spark):
@@ -718,7 +715,7 @@ def _clip_rows(spark):
 def test_decode_state_merge_equals_direct(spark):
     """state(batch 0) + state(batch 1) + state(batch 2) folds BIT-EXACTLY
     to the one-pass state — every field including the decimal sum_abs."""
-    from baskerville_spark.checks import audio_state as AS
+    from baskerville_spark.gates import audio_state as AS
 
     clips = _clip_rows(spark)
     batches = [
@@ -744,7 +741,7 @@ def test_decode_state_exact_integers(spark):
     samples on the two clipped clips (synth amplitude is clipped at
     16384·(0.6+noise) — rails only where planted); total_samples counts
     only decoded clips (58·~samples)."""
-    from baskerville_spark.checks import audio_state as AS
+    from baskerville_spark.gates import audio_state as AS
 
     parts = AS.decode_state(_clip_rows(spark)).collect()
     assert sorted(r["part_id"] for r in parts) == [0, 1]
@@ -763,7 +760,7 @@ def test_decode_state_exact_integers(spark):
 def test_decode_state_plan_no_payload_shuffle(spark):
     """Payload bytes must never cross an exchange: the only shuffle is the
     narrow post-decode aggregate."""
-    from baskerville_spark.checks import audio_state as AS
+    from baskerville_spark.gates import audio_state as AS
 
     st = AS.decode_state(_clip_rows(spark))
     plan = st._jdf.queryExecution().executedPlan().toString()
@@ -802,13 +799,13 @@ def test_histogram_ks_matches_driver_fold(spark):
     assert abs(got["ks"] - exp) < 1e-12
 
 
-# --- schema evolution (checks/evolution.py) --------------------------------
+# --- schema evolution (gates/evolution.py) --------------------------------
 
 
 def test_schema_evolution_all_change_classes(spark):
     from pyspark.sql import types as T
 
-    from baskerville_spark.checks.evolution import schema_evolution_report
+    from baskerville_spark.gates.evolution import schema_evolution_report
 
     old = T.StructType(
         [
@@ -849,7 +846,7 @@ def test_schema_evolution_all_change_classes(spark):
 def test_schema_evolution_df_empty_and_no_jobs(spark):
     from pyspark.sql import types as T
 
-    from baskerville_spark.checks.evolution import schema_evolution_df
+    from baskerville_spark.gates.evolution import schema_evolution_df
 
     s = T.StructType([T.StructField("x", T.IntegerType(), True)])
     df = schema_evolution_df(spark, s, s)
@@ -859,7 +856,7 @@ def test_schema_evolution_df_empty_and_no_jobs(spark):
     ]
 
 
-# --- partition completeness (checks/completeness.py) ------------------------
+# --- partition completeness (gates/completeness.py) ------------------------
 
 
 def _mk_events(spark, rows):
@@ -869,7 +866,7 @@ def _mk_events(spark, rows):
 def test_completeness_verdict_classes(spark):
     import datetime as dt
 
-    from baskerville_spark.checks.completeness import (
+    from baskerville_spark.gates.completeness import (
         completeness_verdicts,
         expected_from_snapshot,
     )
@@ -906,7 +903,7 @@ def test_completeness_verdict_classes(spark):
 def test_completeness_count_low_precedes_stale_and_ok_is_ok(spark):
     import datetime as dt
 
-    from baskerville_spark.checks.completeness import (
+    from baskerville_spark.gates.completeness import (
         completeness_verdicts,
         expected_from_snapshot,
     )
@@ -927,11 +924,11 @@ def test_completeness_count_low_precedes_stale_and_ok_is_ok(spark):
     assert out[2]["status"] == "ok" and out[2]["n_rows"] == 3
 
 
-# --- row-level snapshot diff (checks/snapshot.py) ---------------------------
+# --- row-level snapshot diff (gates/snapshot.py) ---------------------------
 
 
 def test_row_level_diff_statuses_and_churn_bound(spark):
-    from baskerville_spark.checks.snapshot import row_level_diff
+    from baskerville_spark.gates.snapshot import row_level_diff
 
     a = spark.createDataFrame(
         [(1, 10, "x", 1.0), (1, 11, "y", 2.0), (2, 20, "z", 3.0), (2, 21, "w", 4.0)],
@@ -956,7 +953,7 @@ def test_row_level_diff_statuses_and_churn_bound(spark):
 def test_row_level_diff_prunes_partitions_on_disk(spark, tmp_path):
     """changed_parts must reach the scan as a partition filter when the
     table is physically partitioned — the stage-2 pruning contract."""
-    from baskerville_spark.checks.snapshot import row_level_diff
+    from baskerville_spark.gates.snapshot import row_level_diff
 
     rows = [(p, k, float(k)) for p in range(4) for k in range(5)]
     df = spark.createDataFrame(rows, "part int, k int, v double")
@@ -974,7 +971,7 @@ def test_row_level_diff_prunes_partitions_on_disk(spark, tmp_path):
 
 
 def test_row_level_diff_composite_key(spark):
-    from baskerville_spark.checks.snapshot import row_level_diff
+    from baskerville_spark.gates.snapshot import row_level_diff
 
     a = spark.createDataFrame(
         [(1, 1, 1, "p"), (1, 1, 2, "q")], "part int, k1 int, k2 int, s string"
@@ -1053,7 +1050,7 @@ def test_suite_json_roundtrip_and_equivalence(spark):
 
 
 # ---------------------------------------------------------------------------
-# Metrics history + run-over-run anomaly detection (checks/history.py)
+# Metrics history + run-over-run anomaly detection (gates/history.py)
 # ---------------------------------------------------------------------------
 
 def _hist_rows(spark, series, part_id=0, column_name="c", metric_name="m"):
@@ -1084,7 +1081,7 @@ def test_metric_history_melt_from_column_stats(spark, t1_clips):
 
 
 def test_anomaly_flat_history_then_jump(spark):
-    from baskerville_spark.checks.history import detect_metric_anomalies
+    from baskerville_spark.gates.history import detect_metric_anomalies
 
     # stddev of a flat series is 0 — the k-sigma rule alone would divide
     # into the floor; the rel-change rule must catch the jump.
@@ -1099,7 +1096,7 @@ def test_anomaly_flat_history_then_jump(spark):
 
 
 def test_anomaly_min_history_warmup_never_flags(spark):
-    from baskerville_spark.checks.history import detect_metric_anomalies
+    from baskerville_spark.gates.history import detect_metric_anomalies
 
     # a violent jump at run 1 is NOT flagged: only 1 prior run (< min 3)
     hist = _hist_rows(spark, [100.0, 500.0, 100.0])
@@ -1111,7 +1108,7 @@ def test_anomaly_min_history_warmup_never_flags(spark):
 
 
 def test_anomaly_arithmetic_ramp_stays_in_band(spark):
-    from baskerville_spark.checks.history import detect_metric_anomalies
+    from baskerville_spark.gates.history import detect_metric_anomalies
 
     # steady growth is NOT an anomaly under the 3-sigma band: for an
     # arithmetic ramp the deviation from the trailing mean is (n+1)/2 steps
@@ -1122,7 +1119,7 @@ def test_anomaly_arithmetic_ramp_stays_in_band(spark):
 
 
 def test_anomaly_series_are_independent_per_key(spark):
-    from baskerville_spark.checks.history import detect_metric_anomalies
+    from baskerville_spark.gates.history import detect_metric_anomalies
 
     a = _hist_rows(spark, [10.0, 10.0, 10.0, 10.0, 30.0], metric_name="m_a")
     b = _hist_rows(spark, [10.0, 10.0, 10.0, 10.0, 10.0], metric_name="m_b")
@@ -1131,7 +1128,7 @@ def test_anomaly_series_are_independent_per_key(spark):
     assert flagged == {("m_a", 4)}
 
 
-# -- constraint suggestion + functional dependencies (checks/suggest.py) ----
+# -- constraint suggestion + functional dependencies (gates/suggest.py) ----
 
 
 def _suggest_frame(spark):
@@ -1145,7 +1142,7 @@ def _suggest_frame(spark):
 
 
 def test_suggest_constraints_rules(spark):
-    from baskerville_spark.checks.suggest import suggest_constraints
+    from baskerville_spark.gates.suggest import suggest_constraints
 
     out = {(r["col_name"], r["kind"]): r
            for r in suggest_constraints(_suggest_frame(spark)).collect()}
@@ -1165,7 +1162,7 @@ def test_suggest_constraints_rules(spark):
 
 
 def test_suggest_structurally_sparse_column_gets_no_completeness(spark):
-    from baskerville_spark.checks.suggest import suggest_constraints
+    from baskerville_spark.gates.suggest import suggest_constraints
 
     df = spark.range(100).select(
         "id", F.when(F.col("id") % 2 == 0, F.lit(None))
@@ -1182,7 +1179,7 @@ def test_suggested_suite_roundtrip_all_pass(spark):
     where 6-decimal rounding would cut it (a min and a max with 7
     decimals; a null rate below 4e-7, which rounds to 0.0)."""
     from baskerville_spark.checks import suite as S
-    from baskerville_spark.checks.suggest import suggest_constraints
+    from baskerville_spark.gates.suggest import suggest_constraints
 
     def suite_from_suggestions(df):
         # 'unique' has no single-pass suite kind; it is left out
@@ -1215,7 +1212,7 @@ def test_suggested_suite_roundtrip_all_pass(spark):
 
 
 def test_functional_dependency_holds_violates_and_nulls(spark):
-    from baskerville_spark.checks.suggest import functional_dependency
+    from baskerville_spark.gates.suggest import functional_dependency
 
     df = spark.createDataFrame(
         [(1, "x", "a"), (1, "x", "a"),     # duplicate rows agree
@@ -1231,7 +1228,7 @@ def test_functional_dependency_holds_violates_and_nulls(spark):
 
 
 def test_functional_dependency_composite_determinant(spark):
-    from baskerville_spark.checks.suggest import functional_dependency
+    from baskerville_spark.gates.suggest import functional_dependency
 
     df = spark.createDataFrame(
         [(1, 1, "a"), (1, 2, "b"), (2, 1, "a"),  # all agree per (k1,k2)
@@ -1267,7 +1264,7 @@ def test_benford_digits(spark):
 def test_wasserstein_binned_closed_form(spark):
     from pyspark.sql import functions as F
 
-    from baskerville_spark.checks.drift import wasserstein_binned
+    from baskerville_spark.gates.drift import wasserstein_binned
 
     # side A: one row at bin 0; side B: one row at bin 2 (width 1, 4 bins)
     # CDFs: A = 1,1,1,1  B = 0,0,1,1 -> |diff| = 1,1,0,0 -> W1 = 2.0
@@ -1283,7 +1280,7 @@ def test_wasserstein_binned_closed_form(spark):
 def test_wasserstein_binned_identical_sides_and_clamping(spark):
     from pyspark.sql import functions as F
 
-    from baskerville_spark.checks.drift import wasserstein_binned
+    from baskerville_spark.gates.drift import wasserstein_binned
 
     # identical samples on both sides -> W1 exactly 0; values outside
     # [lo, hi) clamp into the edge bins instead of vanishing
@@ -1300,7 +1297,7 @@ def test_decode_state_agrees_with_invariant_on_empty_payload(spark):
     it as failed and the invariant reports it with decode_ok = false, so
     both passes apply one decode rule."""
     from baskerville_spark import audio as A
-    from baskerville_spark.checks import audio_state as AS
+    from baskerville_spark.gates import audio_state as AS
     from baskerville_spark.checks.invariants import audio_invariant
 
     ok = A.encode(A.synth_pcm_n("c0", 16000, 320), "pcm_s16le")

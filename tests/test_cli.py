@@ -95,7 +95,8 @@ def test_py_files_zip_importable(tmp_path):
             sys.executable, "-c",
             "import sys; sys.path.insert(0, sys.argv[1]); "
             "import baskerville_spark.checks.drift as d; "
-            "import baskerville_spark.functions.dedup; "
+            "import baskerville_spark.gates.dedup; "
+            "import baskerville_spark.gates.iforest; "
             "import baskerville_spark.runtime.runner; "
             "assert 'baskerville_spark.zip' in d.__file__, d.__file__; "
             "print(d.PSI_THRESHOLD)",
@@ -128,8 +129,7 @@ def test_setuptools_build_ships_every_subpackage(tmp_path):
         capture_output=True, text=True, cwd=src,
     )
     assert built.returncode == 0, built.stderr
-    modules = ["checks.drift", "functions.dedup", "ml.iforest", "runtime.runner",
-               "sources.registry", "streaming.stateful"]
+    modules = ["checks.drift", "gates.dedup", "gates.iforest", "runtime.runner"]
     probe = subprocess.run(
         [sys.executable, "-c",
          "import importlib, sys; sys.path.insert(0, sys.argv[1]); "

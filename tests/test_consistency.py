@@ -1,4 +1,4 @@
-"""Metadata-consistency checks (checks/consistency.py) + the new
+"""Metadata-consistency checks (gates/consistency.py) + the new
 training-pipeline operators (decontaminate, pack_sequences)."""
 
 from __future__ import annotations
@@ -6,14 +6,14 @@ from __future__ import annotations
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
-from baskerville_spark.checks import consistency
-from baskerville_spark.checks.consistency import (
+from baskerville_spark.gates import consistency
+from baskerville_spark.gates.consistency import (
     payload_byte_violations,
     speaking_rate_verdicts,
 )
-from baskerville_spark.functions.dedup import decontaminate
-from baskerville_spark.functions import packing
-from baskerville_spark.functions.packing import pack_sequences, packed_bin_summary
+from baskerville_spark.gates.dedup import decontaminate
+from baskerville_spark.gates import packing
+from baskerville_spark.gates.packing import pack_sequences, packed_bin_summary
 
 
 def _meta_rows(spark):
@@ -152,7 +152,7 @@ def test_pack_sequences_matches_serial_cumsum(spark, monkeypatch):
 
 def test_mixture_sample(spark):
     from pyspark.sql import Row
-    from baskerville_spark.functions.sampling import mixture_sample
+    from baskerville_spark.gates.sampling import mixture_sample
 
     rows = [Row(doc_id=i, source=f"s{i % 4}") for i in range(400)]  # 100 per group
     df = spark.createDataFrame(rows)
@@ -175,7 +175,7 @@ def test_mixture_sample(spark):
 
 
 def test_chunk_documents(spark, monkeypatch):
-    from baskerville_spark.functions.packing import chunk_documents
+    from baskerville_spark.gates.packing import chunk_documents
 
     monkeypatch.setattr(packing, "CHUNK_TOKENS", 10)
     monkeypatch.setattr(packing, "CHUNK_STRIDE", 8)
@@ -199,8 +199,8 @@ def test_chunk_documents(spark, monkeypatch):
 
 
 def test_vocab_oov(spark, monkeypatch):
-    from baskerville_spark.functions import text
-    from baskerville_spark.functions.text import oov_rate, vocab_top_tokens
+    from baskerville_spark.gates import text
+    from baskerville_spark.gates.text import oov_rate, vocab_top_tokens
 
     df = spark.createDataFrame(
         [Row(doc_id=1, text="a a a b b c"),
@@ -218,8 +218,8 @@ def test_vocab_oov(spark, monkeypatch):
 
 
 def test_robust_outlier_violations(spark, monkeypatch):
-    from baskerville_spark.checks import stats
-    from baskerville_spark.checks.stats import robust_outlier_violations
+    from baskerville_spark.gates import stats
+    from baskerville_spark.gates.stats import robust_outlier_violations
 
     monkeypatch.setattr(stats, "OUTLIER_K", 3.0)
     # group g: values 1..9 plus a 100 outlier -> med 5.5, MAD 2.5
@@ -244,7 +244,7 @@ def test_pack_sequences_plan_no_global_window(spark):
     exchange at all — re-running RangePartitioner's sampling for the output
     was the round-4 boundary-drift hazard. The only exchange left is the
     hash shuffle the block window needs."""
-    from baskerville_spark.functions.packing import pack_sequences
+    from baskerville_spark.gates.packing import pack_sequences
 
     rows = [Row(doc_id=i, text="a b c") for i in range(100)]
     packed = pack_sequences(spark.createDataFrame(rows))
@@ -256,8 +256,8 @@ def test_pack_sequences_plan_no_global_window(spark):
 
 
 def test_cosine_topk_batched(spark, monkeypatch):
-    from baskerville_spark.functions import similarity
-    from baskerville_spark.functions.similarity import cosine_topk_batched
+    from baskerville_spark.gates import similarity
+    from baskerville_spark.gates.similarity import cosine_topk_batched
 
     corpus = spark.createDataFrame(
         [Row(vec_id=1, embedding=[1.0, 0.0]),
@@ -280,7 +280,7 @@ def test_cosine_topk_batched(spark, monkeypatch):
 
 
 def test_partition_spill_flags_cross_partition_keys_only(spark):
-    from baskerville_spark.checks.consistency import partition_spill
+    from baskerville_spark.gates.consistency import partition_spill
 
     df = spark.createDataFrame(
         [
@@ -297,7 +297,7 @@ def test_partition_spill_flags_cross_partition_keys_only(spark):
 
 
 def test_out_of_order_stats_running_max(spark):
-    from baskerville_spark.checks.consistency import out_of_order_stats
+    from baskerville_spark.gates.consistency import out_of_order_stats
 
     # u1: seq 3 is late vs the running max set at seq 1 (10:00) even
     # though it is in order vs its NEIGHBOUR (seq 2, 08:00 — itself late);

@@ -88,7 +88,7 @@ def test_capture_baseline_categorical_single_job(spark, monkeypatch):
 def test_rolling_psi_verdicts(spark):
     from pyspark.sql import functions as F
 
-    from baskerville_spark.checks.drift import rolling_psi_verdicts
+    from baskerville_spark.gates.drift import rolling_psi_verdicts
 
     # windows 1,2: identical uniform-ish values; window 3: hard shift into
     # the top bucket; window 5 has no consecutive predecessor -> no row
@@ -114,7 +114,7 @@ def test_rolling_psi_verdicts(spark):
 def test_rolling_ks_verdicts(spark):
     from pyspark.sql import functions as F
 
-    from baskerville_spark.checks.drift import rolling_ks_verdicts
+    from baskerville_spark.gates.drift import rolling_ks_verdicts
 
     rows = [(1, float(v)) for v in (1.0, 10.0, 50.0, 200.0) * 25]
     rows += [(2, float(v)) for v in (1.0, 10.0, 50.0, 200.0) * 25]
@@ -138,7 +138,8 @@ def test_psi_attribution_terms_sum_to_verdict_psi(spark):
 
     from pyspark.sql import Row
 
-    from baskerville_spark.checks.drift import drift_verdicts, psi_attribution
+    from baskerville_spark.checks.drift import drift_verdicts
+    from baskerville_spark.gates.drift import psi_attribution
 
     df = spark.createDataFrame(
         [(p, float(v % 10)) for p in (0, 1) for v in range(200)],
@@ -166,7 +167,7 @@ def test_psi_attribution_terms_sum_to_verdict_psi(spark):
 def test_psi_attribution_top_k_and_plan(spark):
     from pyspark.sql import Row
 
-    from baskerville_spark.checks.drift import psi_attribution
+    from baskerville_spark.gates.drift import psi_attribution
 
     # part 0: all mass lands in the last bin -> it must dominate
     df = spark.createDataFrame(
@@ -212,7 +213,7 @@ def test_chi2_homogeneity(spark):
 
 
 def test_mannwhitney_u(spark):
-    from baskerville_spark.checks.drift import mannwhitney_u
+    from baskerville_spark.gates.drift import mannwhitney_u
 
     # no ties: A=[1,2,3] B=[4,5,6] -> U_A=0 (A never wins), U_B=9;
     # u2 is 2*U exactly; z antisymmetric and negative for the low group
@@ -353,7 +354,7 @@ def test_rolling_chi2_verdicts(spark):
 
     from pyspark.sql import functions as F
 
-    from baskerville_spark.checks.drift import rolling_chi2_verdicts
+    from baskerville_spark.gates.drift import rolling_chi2_verdicts
 
     # identical windows -> chi2 exactly 0 -> V 0; hard shift flags
     rows = [(1, float(v)) for v in (1.0, 10.0, 50.0, 200.0) * 25]
@@ -409,12 +410,8 @@ def test_stat_operators_cache_cell_frames(spark, tmp_path):
     re-scan the fact table — unpersisted, chi2/MI cost FOUR full scans
     and the rank ops six. Pinned so a dropped .persist() regresses
     loudly."""
-    from baskerville_spark.checks.drift import (
-        chi2_homogeneity,
-        mannwhitney_u,
-        mutual_info,
-        spearman_corr,
-    )
+    from baskerville_spark.checks.drift import chi2_homogeneity, mutual_info, spearman_corr
+    from baskerville_spark.gates.drift import mannwhitney_u
     from baskerville_spark.checks.stats import benford_digits
 
     df = spark.createDataFrame(
@@ -441,7 +438,7 @@ def test_wasserstein_caches_cell_frame(spark):
     test_stat_operators_cache_cell_frames)."""
     from pyspark.sql import functions as F
 
-    from baskerville_spark.checks.drift import wasserstein_binned
+    from baskerville_spark.gates.drift import wasserstein_binned
 
     df = spark.createDataFrame(
         [("g", 1.0, True), ("g", 2.0, False)], "grp string, v double, sa boolean"

@@ -1,5 +1,5 @@
 """Feature-vector funnel and updateable-feature merge algebra
-(functions/features.py vs reference src/baskerville/features/)."""
+(gates/features.py vs reference src/baskerville/features/)."""
 
 from __future__ import annotations
 
@@ -9,7 +9,7 @@ import statistics
 import pytest
 from pyspark.sql import functions as F
 
-from baskerville_spark.functions.features import (
+from baskerville_spark.gates.features import (
     UpdateSpec,
     feature_vector,
     update_feature_vector,
@@ -203,8 +203,8 @@ def test_feature_loop_incremental_equals_batch(spark, tmp_path):
     the pooled algebra reproduce the one-shot vector over all rows
     EXACTLY (count/mean/var/max/min), and the cache was republished
     incrementally (one version per batch), not recomputed from raw."""
-    from baskerville_spark.runtime.feature_loop import run_feature_loop
-    from baskerville_spark.runtime.state import StateStore
+    from baskerville_spark.gates.feature_loop import run_feature_loop
+    from baskerville_spark.gates.state import StateStore
 
     src = tmp_path / "src"
     src.mkdir()

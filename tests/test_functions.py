@@ -6,20 +6,20 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from baskerville_spark.functions import dedup
-from baskerville_spark.functions.dedup import (
+from baskerville_spark.gates import dedup
+from baskerville_spark.gates.dedup import (
     exact_duplicates,
     minhash_lsh_pairs,
     ngram_jaccard_pairs,
     simhash,
 )
-from baskerville_spark.functions import similarity
-from baskerville_spark.functions.similarity import (
+from baskerville_spark.gates import similarity
+from baskerville_spark.gates.similarity import (
     brute_force_pairs,
     cosine_topk,
     hyperplane_lsh_pairs,
 )
-from baskerville_spark.functions.text import fingerprint, lang_id, quality_features
+from baskerville_spark.gates.text import fingerprint, lang_id, quality_features
 
 DOCS = [
     (1, "the quick brown fox jumps over the lazy dog near the river bank today"),
@@ -117,7 +117,7 @@ def test_lsh_recall_vs_brute_force(spark, monkeypatch):
 
 
 def test_ivf_topk_matches_brute_force(spark, monkeypatch):
-    from baskerville_spark.functions.similarity import ivf_topk, train_ivf_centroids
+    from baskerville_spark.gates.similarity import ivf_topk, train_ivf_centroids
 
     df = _vec_df(spark, n=120, dim=16)
     monkeypatch.setattr(similarity, "IVF_SAMPLE_MOD", 2)
@@ -192,7 +192,7 @@ def test_minhash_verify_is_candidates_only(docs):
 
 
 def test_simhash_near_dups_planted(spark):
-    from baskerville_spark.functions.dedup import simhash_near_dups
+    from baskerville_spark.gates.dedup import simhash_near_dups
 
     base = " ".join(f"tok{i}" for i in range(400))
     docs = [
@@ -214,7 +214,7 @@ def test_simhash_near_dups_planted(spark):
 
 
 def test_geo_localize_lookup(spark):
-    from baskerville_spark.functions.geo import localize_events
+    from baskerville_spark.gates.geo import localize_events
 
     rows = [
         (1, 0, "2024-01-01 12:00:00"),     # UTC offset 0 → hour 12, not night
@@ -232,7 +232,7 @@ def test_geo_localize_lookup(spark):
 
 
 def test_multimodal_image_plumbing(spark):
-    from baskerville_spark.functions.multimodal import image_features, make_bmp
+    from baskerville_spark.gates.multimodal import image_features, make_bmp
 
     w, h = 4, 3
     payload = (
@@ -260,7 +260,7 @@ def test_multimodal_image_plumbing(spark):
 
 
 def test_video_frame_sampling(spark):
-    from baskerville_spark.functions.multimodal import sample_frames
+    from baskerville_spark.gates.multimodal import sample_frames
 
     w, h, n = 4, 2, 25
     frames = b"".join(bytes([min(i * 10, 255)]) * (w * h) for i in range(n))
@@ -286,7 +286,7 @@ def test_video_frame_sampling(spark):
 def test_bmp_decode_and_ahash_pattern():
     import numpy as np
 
-    from baskerville_spark.functions.multimodal import _ahash64, _decode_bmp, make_bmp
+    from baskerville_spark.gates.multimodal import _ahash64, _decode_bmp, make_bmp
 
     img = _decode_bmp(make_bmp(16, 16, (255, 0, 0)))
     assert img.shape == (16, 16, 3)
@@ -305,7 +305,7 @@ def test_bmp_decode_and_ahash_pattern():
 def test_geo_tz_offset_edge_inputs(spark):
     """Library-robustness guards: lon=180 and NULL must not fail the task;
     fractional negative lon follows the floor-based nautical formula."""
-    from baskerville_spark.functions.geo import tz_offset_udf
+    from baskerville_spark.gates.geo import tz_offset_udf
 
     udf = tz_offset_udf(spark)
     rows = [(1, 180.0), (2, None), (3, -7.9), (4, 7.4), (5, -180.0)]
@@ -321,7 +321,7 @@ def test_geo_tz_offset_edge_inputs(spark):
 def test_similarity_null_and_ragged_guards(spark, monkeypatch):
     """NULL embeddings null-propagate through SRP/IVF-assign instead of
     crashing the Python worker; ragged dims raise a descriptive error."""
-    from baskerville_spark.functions.similarity import (
+    from baskerville_spark.gates.similarity import (
         hyperplane_lsh_pairs, ivf_assign, train_ivf_centroids,
     )
 
@@ -353,7 +353,7 @@ def test_ivf_probe_prunes_clusters(spark):
     corpus, nprobe=2 of 8 centroids scans <= 30% of the rows while still
     matching exact top-k (recall 1.0) - the property that makes IVF the
     scale path (cluster IN (...) prunes the scan at 10^12 rows)."""
-    from baskerville_spark.functions.similarity import (
+    from baskerville_spark.gates.similarity import (
         ivf_assign, ivf_topk, train_ivf_centroids,
     )
 
@@ -386,7 +386,7 @@ def test_ivf_training_sample_hard_cap(spark, monkeypatch):
     """The quantizer's driver-side sample is HARD-bounded by max_train_rows
     no matter how large the corpus or how loose sample_mod is — the uncapped
     id%mod filter this replaces collected a fixed corpus fraction."""
-    from baskerville_spark.functions.similarity import (
+    from baskerville_spark.gates.similarity import (
         ivf_training_sample,
         train_ivf_centroids,
     )
@@ -421,7 +421,7 @@ def test_image_codec_seam_contract(monkeypatch):
     real clusters' claim instead of just asserting it."""
     import pandas as pd
 
-    from baskerville_spark.functions import multimodal
+    from baskerville_spark.gates import multimodal
 
     class _FakeImg:
         def convert(self, mode):
@@ -475,7 +475,7 @@ def test_audio_codec_seam_contract(monkeypatch):
 
 
 def test_tfidf_cosine_pairs(spark, monkeypatch):
-    from baskerville_spark.functions.dedup import tfidf_cosine_pairs
+    from baskerville_spark.gates.dedup import tfidf_cosine_pairs
     import math
 
     # 1&2 share {apple, banana}; doc 3 disjoint; "the" in every doc is
@@ -503,7 +503,7 @@ def test_tfidf_cosine_pairs(spark, monkeypatch):
 
 
 def test_containment_catches_excerpts_jaccard_misses(spark):
-    from baskerville_spark.functions.dedup import (
+    from baskerville_spark.gates.dedup import (
         ngram_jaccard_pairs,
         shingle_containment_pairs,
     )
@@ -531,7 +531,7 @@ def test_containment_catches_excerpts_jaccard_misses(spark):
 
 
 def test_repetition_metrics(spark):
-    from baskerville_spark.functions.text import repetition_metrics
+    from baskerville_spark.gates.text import repetition_metrics
 
     docs = spark.createDataFrame(
         [
@@ -555,7 +555,7 @@ def test_repetition_metrics(spark):
 def test_char_entropy(spark):
     import math
 
-    from baskerville_spark.functions.text import char_entropy
+    from baskerville_spark.gates.text import char_entropy
 
     docs = spark.createDataFrame(
         [
@@ -573,7 +573,7 @@ def test_char_entropy(spark):
 
 
 def test_pii_scrub(spark):
-    from baskerville_spark.functions.text import pii_scrub
+    from baskerville_spark.gates.text import pii_scrub
 
     docs = spark.createDataFrame(
         [
@@ -599,7 +599,7 @@ def test_pii_scrub(spark):
 def test_bloom_semi_join_equals_exact(spark):
     from pyspark.sql import functions as F
 
-    from baskerville_spark.functions.bloom import bloom_semi_join
+    from baskerville_spark.gates.bloom import bloom_semi_join
 
     fact = spark.range(5000).select(
         F.col("id").alias("rowid"), (F.col("id") % 700).alias("k")
@@ -618,7 +618,7 @@ def test_bloom_bitmap_bounds_and_pruning(spark):
     import numpy as np
     from pyspark.sql import functions as F
 
-    from baskerville_spark.functions.bloom import (
+    from baskerville_spark.gates.bloom import (
         _positions,
         build_bloom_bitmap,
     )
@@ -656,7 +656,7 @@ def test_keep_canonical_quality_and_tiebreak(spark):
     from pyspark.sql import Row
     from pyspark.sql import functions as F
 
-    from baskerville_spark.functions.dedup import keep_canonical
+    from baskerville_spark.gates.dedup import keep_canonical
 
     docs = spark.createDataFrame(
         [
@@ -686,7 +686,7 @@ def test_train_val_test_split_disjoint_exhaustive(spark):
     import pytest
     from pyspark.sql import functions as F
 
-    from baskerville_spark.functions.sampling import train_val_test_split
+    from baskerville_spark.gates.sampling import train_val_test_split
 
     df = spark.range(5000).select(F.col("id").alias("doc_id"))
     out = df.select("doc_id", train_val_test_split())
@@ -706,7 +706,7 @@ def test_split_edge_contracts(spark):
     md5 hash bucket: each edge bucket lands on the documented side."""
     from pyspark.sql import functions as F
 
-    from baskerville_spark.functions.sampling import hash_bucket, train_val_test_split
+    from baskerville_spark.gates.sampling import hash_bucket, train_val_test_split
 
     df = spark.range(5000).select(F.col("id").alias("doc_id"))
     rows = df.select(
@@ -723,7 +723,7 @@ def test_keep_canonical_passes_through_unmapped_docs(spark):
     from pyspark.sql import Row
     from pyspark.sql import functions as F
 
-    from baskerville_spark.functions.dedup import keep_canonical
+    from baskerville_spark.gates.dedup import keep_canonical
 
     docs = spark.createDataFrame(
         [
@@ -747,7 +747,7 @@ def test_keep_canonical_passes_through_unmapped_docs(spark):
 def test_file_skip_plan_soundness_and_null_stats(spark):
     from pyspark.sql import Row
 
-    from baskerville_spark.functions.layout import file_skip_plan
+    from baskerville_spark.gates.layout import file_skip_plan
 
     stats = spark.createDataFrame(
         [
@@ -769,7 +769,7 @@ def test_file_skip_plan_soundness_and_null_stats(spark):
 def test_z_value_bit_interleave(spark):
     from pyspark.sql import functions as F
 
-    from baskerville_spark.functions.layout import z_value
+    from baskerville_spark.gates.layout import z_value
 
     df = spark.createDataFrame(
         [(0, 0), (3, 5), (255, 255), (1, 0), (0, 1)], "x int, y int"
@@ -790,7 +790,7 @@ def test_z_value_bit_interleave(spark):
 def test_plan_compaction_groups_and_large_passthrough(spark):
     from pyspark.sql import Row
 
-    from baskerville_spark.functions.layout import plan_compaction
+    from baskerville_spark.gates.layout import plan_compaction
 
     files = spark.createDataFrame(
         [
@@ -821,7 +821,7 @@ def test_keep_canonical_string_ids(spark):
     from pyspark.sql import Row
     from pyspark.sql import functions as F
 
-    from baskerville_spark.functions.dedup import keep_canonical
+    from baskerville_spark.gates.dedup import keep_canonical
 
     docs = spark.createDataFrame(
         [
@@ -845,8 +845,8 @@ def test_gap_fill(spark, monkeypatch):
     from pyspark.sql import Row
     from pyspark.sql import functions as F
 
-    from baskerville_spark.functions import timegrid
-    from baskerville_spark.functions.timegrid import gap_fill
+    from baskerville_spark.gates import timegrid
+    from baskerville_spark.gates.timegrid import gap_fill
 
     rows = [
         # key a: obs at 0 and 40 (gap of 3 slots), last obs 40
@@ -885,7 +885,7 @@ def test_gap_fill_rejects_reserved_names(spark):
     import pytest
     from pyspark.sql import Row
 
-    from baskerville_spark.functions.timegrid import gap_fill
+    from baskerville_spark.gates.timegrid import gap_fill
 
     df = spark.createDataFrame([Row(k="a", slot=0, oid=1, grid_slot=1.0)])
     with pytest.raises(ValueError, match="reserved by gap_fill"):
@@ -895,7 +895,7 @@ def test_gap_fill_rejects_reserved_names(spark):
 def test_bpe_merges(spark):
     """BPE trainer: leftmost-non-overlapping fold (the 'aaa' classic),
     count-2 floor stop, lexicographic tie-break, unicode symbols."""
-    from baskerville_spark.functions.bpe import train_bpe_merges
+    from baskerville_spark.gates.bpe import train_bpe_merges
 
     docs = spark.createDataFrame(
         [(1, "aaa aaa aaa aaa aaa"), (2, "xy xy xy"), (3, "zz")],
@@ -933,7 +933,7 @@ def test_apply_bpe(spark):
     text, memoized word reuse (same word twice → same tokens)."""
     from pyspark.sql import Row
 
-    from baskerville_spark.functions.bpe import apply_bpe, train_bpe_merges
+    from baskerville_spark.gates.bpe import apply_bpe, train_bpe_merges
 
     corpus = spark.createDataFrame(
         [(1, "aaa aaa aaa aaa aaa"), (2, "xy xy xy")], "id int, text string"
@@ -962,7 +962,7 @@ def test_dedup_lines(spark):
     dup collapse, short-line exemption, empty-doc drop, order preserved."""
     from pyspark.sql import Row
 
-    from baskerville_spark.functions.dedup import dedup_lines
+    from baskerville_spark.gates.dedup import dedup_lines
 
     docs = spark.createDataFrame(
         [
@@ -982,8 +982,8 @@ def test_dedup_lines(spark):
 
 
 def test_zipf_fit(spark, monkeypatch):
-    from baskerville_spark.functions import text
-    from baskerville_spark.functions.text import zipf_fit
+    from baskerville_spark.checks import stats
+    from baskerville_spark.checks.stats import zipf_fit
 
     # two-point OLS is an exact fit: counts (4, 2) at ranks (1, 2) give
     # slope = (ln2 - ln4)/(ln2 - ln1) = -1 and r2 = 1
@@ -1007,7 +1007,7 @@ def test_zipf_fit(spark, monkeypatch):
     assert abs(out["intercept"] - intercept) < 1e-9
 
     # ZIPF_TOP_K truncates the fit frame; single-point fit is undefined -> NULL
-    monkeypatch.setattr(text, "ZIPF_TOP_K", 2)
+    monkeypatch.setattr(stats, "ZIPF_TOP_K", 2)
     top2 = zipf_fit(docs, "text").collect()[0]
     assert top2["n_ranked"] == 2
     one = spark.createDataFrame([("solo solo",)], "text string")
@@ -1016,7 +1016,7 @@ def test_zipf_fit(spark, monkeypatch):
 
 
 def test_select_within_token_budget(spark):
-    from baskerville_spark.functions.sampling import select_within_token_budget
+    from baskerville_spark.gates.sampling import select_within_token_budget
 
     # priority order: p1(10) p2(20) p3(15) p4(5) -> cum 10,30,45,50.
     # budget 45: p1,p2,p3 selected; p4 NOT (greedy prefix — even though
@@ -1061,7 +1061,7 @@ def test_select_within_token_budget_null_tokens_match_sql(
     import duckdb
     from pyspark import SparkContext
 
-    from baskerville_spark.functions.sampling import select_within_token_budget
+    from baskerville_spark.gates.sampling import select_within_token_budget
 
     monkeypatch.setattr(
         SparkContext, "defaultParallelism", property(lambda self: n_blocks)

@@ -1,4 +1,4 @@
-"""Connected-components dedup clustering (functions/graph.py).
+"""Connected-components dedup clustering (gates/graph.py).
 
 The oracle gate (q65) proves end-to-end parity on hash-bucket graphs
 whose star edges all point one hop from the cluster min; these tests pin
@@ -12,8 +12,8 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from baskerville_spark.functions import graph
-from baskerville_spark.functions.graph import (
+from baskerville_spark.gates import graph
+from baskerville_spark.gates.graph import (
     connected_components,
     connected_components_bigstar,
     dedup_clusters,
@@ -234,7 +234,7 @@ def test_incremental_clustering_equals_from_scratch(spark):
     # bridge term's job. incremental_membership must recover both
     # old↔new merges, and the naive (a)∪(b) union must provably MISS
     # them (stranded singletons).
-    from baskerville_spark.functions.graph import (
+    from baskerville_spark.gates.graph import (
         incremental_membership,
         prior_label_membership,
     )

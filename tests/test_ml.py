@@ -5,7 +5,7 @@ from __future__ import annotations
 import numpy as np
 from pyspark.sql import functions as F
 
-from baskerville_spark.ml.iforest import (
+from baskerville_spark.gates.iforest import (
     top_anomalies,
     train_iforest,
     training_sample,
@@ -83,7 +83,7 @@ def _labeled_fixture(spark, n=2000):
 
 
 def test_gbm_learns_separable_rule(spark):
-    from baskerville_spark.ml.gbm import predict_label, train_gbm
+    from baskerville_spark.gates.gbm import predict_label, train_gbm
 
     df = _labeled_fixture(spark)
     model = train_gbm(df, "id", ["f1", "f2"], "label")
@@ -94,7 +94,7 @@ def test_gbm_learns_separable_rule(spark):
 
 
 def test_gbm_deterministic_and_partition_invariant(spark):
-    from baskerville_spark.ml.gbm import predict_proba, train_gbm
+    from baskerville_spark.gates.gbm import predict_proba, train_gbm
 
     df = _labeled_fixture(spark, 800)
     m1 = train_gbm(df, "id", ["f1", "f2"], "label")
@@ -113,7 +113,7 @@ def test_classify_anomalies_dual_thresholds(spark):
     driver-collected isin literal."""
     from pyspark.sql import functions as F
 
-    from baskerville_spark.ml.classify import classify_anomalies
+    from baskerville_spark.gates.classify import classify_anomalies
 
     scored = spark.createDataFrame(
         [("a", 0.40), ("b", 0.40), ("c", 0.50), ("d", 0.30)],

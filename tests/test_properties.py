@@ -6,7 +6,7 @@ from __future__ import annotations
 
 from hypothesis import given, settings, strategies as st
 
-from baskerville_spark.functions.multimodal import _ahash64, _decode_bmp, make_bmp
+from baskerville_spark.gates.multimodal import _ahash64, _decode_bmp, make_bmp
 
 
 @given(
@@ -32,8 +32,8 @@ def test_bmp_roundtrip_property(w, h, rgb):
 def test_jaccard_pair_invariants(spark, texts):
     from unittest import mock
 
-    from baskerville_spark.functions import dedup
-    from baskerville_spark.functions.dedup import ngram_jaccard_pairs
+    from baskerville_spark.gates import dedup
+    from baskerville_spark.gates.dedup import ngram_jaccard_pairs
     docs = [(i, t) for i, t in enumerate(texts)] + [(100, texts[0]), (101, texts[0])]
     df = spark.createDataFrame(docs, "doc_id int, text string")
     with mock.patch.multiple(dedup, SHINGLE_N=2, JACCARD_THRESHOLD=0.0, JACCARD_MAX_DF=1 << 30):
@@ -60,7 +60,7 @@ def test_exact_duplicates_forms_agree(spark, texts, k):
     form must return IDENTICAL (hash, dup_count, ids) groups on arbitrary
     inputs — including null texts (neither form groups them: NULL payloads
     are a schema-check concern) and duplicate counts straddling k."""
-    from baskerville_spark.functions.dedup import exact_duplicates
+    from baskerville_spark.gates.dedup import exact_duplicates
     from oracles import exact_duplicates_window
 
     rows = [(i, t) for i, t in enumerate(texts)]
@@ -89,11 +89,11 @@ def test_pooled_merge_equals_recompute_property(spark, vals, cut):
     """For ANY values and ANY split point, merging the two halves'
     (n, mean, var_samp, max, min) through the pooled algebra
     (square_variance=False) reproduces the whole-batch statistics —
-    the invariant that lets the incremental cache (runtime/feature_loop)
+    the invariant that lets the incremental cache (gates/feature_loop)
     replace recomputation at 10^12 rows."""
     import statistics
 
-    from baskerville_spark.functions.features import (
+    from baskerville_spark.gates.features import (
         UpdateSpec,
         update_feature_vector,
     )
@@ -152,8 +152,8 @@ def test_connected_components_match_union_find(spark, edges, data):
     all allowed). Few examples: each is several Spark jobs."""
     from unittest import mock
 
-    from baskerville_spark.functions import graph
-    from baskerville_spark.functions.graph import (
+    from baskerville_spark.gates import graph
+    from baskerville_spark.gates.graph import (
         connected_components,
         connected_components_bigstar,
     )
@@ -212,7 +212,7 @@ def test_incremental_clustering_theorem(spark, rows, split_mod):
     tables and splits: cluster(batch1) + incremental_membership(batch2,
     prior, retained_index) == cluster(everything). Three Spark
     clusterings per example — few examples."""
-    from baskerville_spark.functions.graph import (
+    from baskerville_spark.gates.graph import (
         dedup_clusters,
         incremental_membership,
     )
@@ -246,7 +246,7 @@ def test_audio_fingerprint_codec_invariance_property(samples):
     import numpy as np
 
     from baskerville_spark import audio
-    from baskerville_spark.functions.audio_dedup import envelope_fingerprint
+    from baskerville_spark.gates.audio_dedup import envelope_fingerprint
 
     pcm = np.asarray(samples, dtype=np.int16)
     back = audio.decode(audio.encode(pcm, "flac"), "flac")
@@ -341,7 +341,7 @@ def test_gap_fill_matches_pandas_reference(spark, obs):
     marking)."""
     import pandas as pd
 
-    from baskerville_spark.functions.timegrid import MAX_FILL, gap_fill
+    from baskerville_spark.gates.timegrid import MAX_FILL, gap_fill
 
     step = 10
     rows = [
@@ -368,7 +368,7 @@ def test_gap_fill_matches_pandas_reference(spark, obs):
     assert got == expect
 
 
-# --- schema evolution properties (checks/evolution.py) ----------------------
+# --- schema evolution properties (gates/evolution.py) ----------------------
 
 _TYPE_POOL = ["byte", "short", "integer", "long", "float", "double", "string"]
 
@@ -393,7 +393,7 @@ def test_schema_evolution_properties(old_spec, new_spec):
     closure (no symmetric pair is compatible both ways except none)."""
     from pyspark.sql import types as T
 
-    from baskerville_spark.checks.evolution import (
+    from baskerville_spark.gates.evolution import (
         _WIDENINGS,
         schema_evolution_report,
     )

@@ -16,6 +16,13 @@ with its tests.
 The walk over-approximates: a name bound by several imports in one module
 reaches all of them, and reaching a class reaches all of its methods.
 
+The engine is what a production run executes: the package outside
+``baskerville_spark/gates/``. No engine module imports the gate library,
+and every engine definition is reached from the roots with the gate table
+and driver API of ``__spark_entry__`` blocked, or is on ``GATE_ONLY``: a
+definition only gates call, kept beside the file or row layout it reads or
+writes. Everything else only a gate reaches lives in ``gates/``.
+
 The parameter walk matches calls by callee name only. A defaulted parameter
 of a public function, public method or ``__init__`` (called by its class's
 name) is live when two calls to that name in the package or a root file
@@ -52,11 +59,46 @@ from types import SimpleNamespace
 ROOT = Path(__file__).resolve().parents[1]
 PKG = "baskerville_spark"
 
+GATES = f"{PKG}.gates"
 # Definitions kept without a production caller, each with its reason.
 ALLOWED = {
-    # The exposition form the validation-path trace spine is to publish.
-    ("baskerville_spark.runtime.metrics", "render_prometheus"),
+    ("baskerville_spark.runtime.metrics", "render_prometheus"):
+        "the exposition form the validation-path trace spine is to publish",
 }
+# Engine definitions only gates reach, each with the layout that keeps it
+# in the engine. The walks treat them as roots, so their callees are engine.
+GATE_ONLY = {
+    ("baskerville_spark.runtime.manifest", "invalidate_partitions"):
+        "writes the manifest's marks, named as commit_partition names them",
+    ("baskerville_spark.runtime.runner", "table_stats_from_states"):
+        "reads the states sink layout run_resumable writes",
+    ("baskerville_spark.runtime.runner", "route_quarantine"):
+        "reads the violations sink layout run_resumable writes",
+    **{
+        ("baskerville_spark.checks.stats_state", name):
+            "reads the state-row columns stats_states writes"
+        for name in (
+            "merge_stats_states", "finalize_stats", "histogram_quantile_bounds",
+            "histogram_ks", "histogram_psi",
+        )
+    },
+    **{
+        ("baskerville_spark.checks.suite", name):
+            "builds a constraint kind suite_from_json parses"
+        for name in (
+            "completeness", "bounds", "pattern", "membership", "predicate",
+            "mean_between", "approx_distinct_min",
+        )
+    },
+    ("baskerville_spark.generator", "PLANT_SCHEMA"):
+        "the generator's clip row layout, one planted row",
+    ("baskerville_spark.generator", "planted_clip"):
+        "the generator's clip row layout, one planted row",
+    ("baskerville_spark.audio", "map_payloads"):
+        "the Arrow payload boundary decode_pass shares",
+}
+# The gate table and the driver API that reads it: the engine walk stops here.
+GATE_API = {("__spark_entry__", n) for n in ("_GATES", "entry", "queries", "oracle_sql")}
 # Defaulted parameters that production calls do not both set and leave at
 # the default, and parameters their def never reads, each with its reason.
 ALLOWED_PARAMS = {
@@ -89,8 +131,8 @@ class _Module:
     """One source file: what each top-level name is bound to, and the
     statements that bind it."""
 
-    def __init__(self, path):
-        self.tree = ast.parse(path.read_text(), str(path))
+    def __init__(self, source, filename="<synthetic>"):
+        self.tree = ast.parse(source, filename)
         self.defs = {}  # name -> [statement]: def, class or assignment
         self.imports = {}  # name -> {("mod", m) | ("def", m, attr)}
         self.body = []  # top-level statements that bind no name
@@ -153,20 +195,29 @@ def _references(stmts):
                 yield [node.id]
 
 
-def _load():
-    paths = {_module_name(p): p for p in sorted((ROOT / PKG).rglob("*.py"))}
-    for p in _root_files():
-        paths.setdefault(_module_name(p), p)
-    modules = {name: _Module(p) for name, p in paths.items()}
+def _parse(sources):
+    """``{module name: _Module}`` of ``{module name: (source, filename)}``."""
+    modules = {name: _Module(*src) for name, src in sources.items()}
     for m in modules.values():
         m.resolve_imports(modules)
     return modules
 
 
-def unreached():
+def _load():
+    paths = {_module_name(p): p for p in sorted((ROOT / PKG).rglob("*.py"))}
+    for p in _root_files():
+        paths.setdefault(_module_name(p), p)
+    return _parse({name: (p.read_text(), str(p)) for name, p in paths.items()})
+
+
+def unreached(modules=None, roots=None, blocked=(), extra=ALLOWED):
     """Sorted ``(module, name)`` of every package def, class and module-level
-    assignment (dunder names aside) no root reaches."""
-    modules = _load()
+    assignment (dunder names aside) that no root module reaches. The walk
+    never enters the ``(module, name)`` definitions in ``blocked`` and starts
+    at those in ``extra`` too."""
+    if modules is None:
+        modules = _load()
+        roots = [_module_name(p) for p in _root_files()]
     seen, loaded = set(), set()
     work = []
 
@@ -182,7 +233,7 @@ def unreached():
     def reach(mod, name, rest=()):
         """The name ``name`` (then attributes ``rest``) as seen from ``mod``."""
         m = modules.get(mod)
-        if m is None:
+        if m is None or (mod, name) in blocked:
             return
         if name in m.defs:
             if (mod, name) not in seen:
@@ -206,11 +257,12 @@ def unreached():
         else:
             reach(mod, rest[0], rest[1:])
 
-    for p in _root_files():
-        mod = _module_name(p)
+    for mod in roots:
         load(mod)
         for name in DRIVER_API.get(mod, ()):
             reach(mod, name)
+    for mod, name in extra:
+        reach(mod, name)
     while work:
         mod, stmts = work.pop()
         for chain in _references(stmts):
@@ -223,7 +275,6 @@ def unreached():
         for d, stmts in m.defs.items()
         if not (d.startswith("__") and d.endswith("__"))
         and (name, d) not in seen
-        and (name, d) not in ALLOWED
     )
 
 
@@ -232,6 +283,115 @@ def test_every_package_definition_has_a_production_caller():
     assert not missing, "reached only from tests (delete, or wire into an entry point):\n" + "\n".join(
         f"  {m}.{d}" for m, d in missing
     )
+
+
+def _in_gates(mod):
+    return mod == GATES or mod.startswith(f"{GATES}.")
+
+
+def engine_only_gated(modules=None, roots=None):
+    """Sorted ``(module, name)`` of every definition outside ``gates/`` that
+    only the gate table reaches (``GATE_ONLY`` aside)."""
+    return [
+        (m, d)
+        for m, d in unreached(modules, roots, blocked=GATE_API, extra={**ALLOWED, **GATE_ONLY})
+        if not _in_gates(m)
+    ]
+
+
+def gate_imports(modules=None):
+    """Sorted ``(module, line)`` of every import of ``baskerville_spark.gates``,
+    function-local ones included, in a package module outside ``gates/``."""
+    modules = _load() if modules is None else modules
+    out = []
+    for name, m in modules.items():
+        if name.split(".")[0] != PKG or _in_gates(name):
+            continue
+        for node in ast.walk(m.tree):
+            if isinstance(node, ast.Import):
+                hit = any(_in_gates(a.name) for a in node.names)
+            elif isinstance(node, ast.ImportFrom):
+                hit = _in_gates(node.module or "") or (
+                    node.module == PKG and any(a.name == "gates" for a in node.names)
+                )
+            else:
+                continue
+            if hit:
+                out.append((name, node.lineno))
+    return sorted(out)
+
+
+def test_engine_does_not_import_the_gates():
+    hits = gate_imports()
+    assert not hits, "engine modules importing the gate library:\n" + "\n".join(
+        f"  {m}:{line}" for m, line in hits
+    )
+
+
+def test_every_engine_definition_runs_without_the_gate_table():
+    gated = engine_only_gated()
+    assert not gated, (
+        "engine definitions only gates reach (move them under gates/, or list"
+        " the layout that keeps them in GATE_ONLY):\n" + "\n".join(f"  {m}.{d}" for m, d in gated)
+    )
+
+
+def test_engine_boundary_guard_flags_planted_violations():
+    """An engine module importing the gate library, at module level or in a
+    function, is flagged; a gate module or a root file importing it is not.
+    An engine def only a gate callable reaches is flagged; one a root also
+    calls, or one on the extra roots, is not."""
+    sources = {
+        "__spark_entry__": """
+from baskerville_spark.gates.ops import gate_op
+from baskerville_spark.checks.shared import only_gated
+
+def q1(spark, sf_dir):
+    return gate_op() + only_gated()
+
+_GATES = ((q1, "SELECT 1"),)
+
+def queries():
+    return {f.__name__: f for f, _ in _GATES}
+""",
+        f"{PKG}.main": """
+from baskerville_spark.checks.shared import engine_op
+
+def main():
+    return engine_op()
+
+main()
+""",
+        f"{PKG}.checks.shared": """
+import baskerville_spark.gates.ops
+
+def engine_op():
+    from baskerville_spark import gates
+    return 1
+
+def only_gated():
+    from baskerville_spark.gates.ops import gate_op
+    return gate_op()
+""",
+        f"{PKG}.gates.ops": """
+from baskerville_spark.checks.shared import engine_op
+
+def gate_op():
+    return engine_op()
+""",
+    }
+    modules = _parse({k: (v, k) for k, v in sources.items()})
+    assert gate_imports(modules) == [
+        (f"{PKG}.checks.shared", 2), (f"{PKG}.checks.shared", 5), (f"{PKG}.checks.shared", 9),
+    ]
+    roots = ["__spark_entry__", f"{PKG}.main"]
+    only_gated = (f"{PKG}.checks.shared", "only_gated")
+    assert unreached(modules, roots) == []
+    assert unreached(modules, roots, blocked=GATE_API, extra={}) == [
+        only_gated, (f"{PKG}.gates.ops", "gate_op"),
+    ]
+    assert engine_only_gated(modules, roots) == [only_gated]
+    assert unreached(modules, roots, blocked=GATE_API, extra={only_gated: ""}) == []
 
 
 def _dataclass_fields(cls):

@@ -7,6 +7,8 @@ from __future__ import annotations
 import json
 from datetime import datetime, timezone
 
+import pytest
+
 from baskerville_spark.generator import GenConfig, write_clips, write_transcript_ref
 from baskerville_spark.runtime.manifest import commit_partition, done_partitions
 from baskerville_spark.runtime.runner import ValidationConfig, run_resumable
@@ -179,26 +181,22 @@ def test_lost_checkpoint_fails_loudly_and_resumes(spark, tmp_path, monkeypatch):
     """A violations checkpoint lost after run_validation (an executor loss)
     fails the run with Spark's checkpoint error and commits nothing; the
     next run redoes every partition and writes what a clean run writes."""
-    import pytest
-
     from baskerville_spark.runtime import runner
     from test_runner_golden import _rows
 
     clips_p, _, man_p, out_p = _paths(tmp_path)
     write_clips(spark, clips_p, CFG)
     cfg = ValidationConfig(check_audio=False)
-    real, lost = runner.run_validation, []
+    real = runner.run_validation
 
     def losing(*args, **kwargs):
         res = real(*args, **kwargs)
         res.violations._jdf.queryExecution().logical().rdd().unpersist(True)
-        lost.append(res)
         return res
 
     monkeypatch.setattr(runner, "run_validation", losing)
     with pytest.raises(Exception, match="CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND"):
         run_resumable(spark, clips_p, man_p, out_p, cfg=cfg)
-    lost[0].unpersist()
     assert done_partitions(spark, man_p) == set()
     monkeypatch.undo()
 
@@ -216,6 +214,50 @@ def test_lost_checkpoint_fails_loudly_and_resumes(spark, tmp_path, monkeypatch):
         )
 
     assert ledger(man_p) == ledger(clean_man)
+
+
+@pytest.mark.parametrize("reliable", [False, True], ids=["local", "reliable"])
+def test_failed_sink_write_releases_everything(spark, tmp_path, monkeypatch, reliable):
+    """A sink write that raises fails the run and commits nothing, and the
+    session's persisted-RDD count, and with a checkpoint dir its checkpoint
+    files, are where the run found them; the next run redoes every
+    partition and writes what a clean run writes. The session-global
+    checkpoint dir is unset afterwards so later tests keep the local path."""
+    from pyspark.sql import DataFrameWriter
+
+    from test_runner_golden import _rows
+
+    clips_p, _, man_p, out_p = _paths(tmp_path)
+    write_clips(spark, clips_p, CFG)
+    cfg = ValidationConfig(check_audio=False)
+    sc, ckdir = spark.sparkContext, tmp_path / "ck"
+    real = DataFrameWriter.parquet
+
+    def failing(self, path, *args, **kwargs):
+        if path.endswith("/stats"):
+            raise RuntimeError("injected stats sink failure")
+        return real(self, path, *args, **kwargs)
+
+    before = sc._jsc.getPersistentRDDs().size()
+    if reliable:
+        sc.setCheckpointDir(str(ckdir))
+    try:
+        monkeypatch.setattr(DataFrameWriter, "parquet", failing)
+        with pytest.raises(RuntimeError, match="injected stats sink failure"):
+            run_resumable(spark, clips_p, man_p, out_p, cfg=cfg)
+        monkeypatch.undo()
+        assert sc._jsc.getPersistentRDDs().size() == before
+        assert [p for p in ckdir.rglob("*") if p.is_file()] == []
+    finally:
+        sc._jsc.sc().setCheckpointDir(None)
+    assert done_partitions(spark, man_p) == set()
+
+    assert run_resumable(spark, clips_p, man_p, out_p, cfg=cfg) == [0, 1, 2, 3]
+    clean_out = str(tmp_path / "clean_out")
+    assert run_resumable(spark, clips_p, str(tmp_path / "clean_man"), clean_out, cfg=cfg) == [0, 1, 2, 3]
+    for sink in ("violations", "stats", "verdicts"):
+        assert _rows(spark.read.parquet(f"{out_p}/{sink}")) == _rows(
+            spark.read.parquet(f"{clean_out}/{sink}")), sink
 
 
 def test_no_leaked_blocks(spark, tmp_path):

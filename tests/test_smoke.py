@@ -380,6 +380,44 @@ def test_shared_clip_fixture_keys_on_whole_config(monkeypatch):
 
     a = m._shared_clip_fixture(None, GenConfig(1000, 4))
     assert m._shared_clip_fixture(None, GenConfig(1000, 4)) == a
-    b = m._shared_clip_fixture(None, GenConfig(1000, 4, dur_max_ms=900))
+    b = m._shared_clip_fixture(None, GenConfig(1000, 2))
     assert b != a
-    assert written == [GenConfig(1000, 4), GenConfig(1000, 4, dur_max_ms=900)]
+    assert written == [GenConfig(1000, 4), GenConfig(1000, 2)]
+
+
+def test_stream_shuffle_refuses_a_second_thread(spark):
+    """The shuffle-partition override is session-wide: while one thread
+    holds it, another thread's entry raises instead of racing the
+    save/restore, and the setting is restored once the holder exits."""
+    import threading
+
+    import pytest
+
+    import __spark_entry__ as m
+
+    batch = spark.conf.get("spark.sql.shuffle.partitions")
+    entered, leave, errors = threading.Event(), threading.Event(), []
+
+    def hold():
+        try:
+            with m._stream_shuffle(spark):
+                entered.set()
+                leave.wait(60)
+        except Exception as e:  # noqa: BLE001
+            errors.append(e)
+            entered.set()
+
+    holder = threading.Thread(target=hold)
+    holder.start()
+    try:
+        assert entered.wait(60)
+        with pytest.raises(RuntimeError, match="session-wide"):
+            with m._stream_shuffle(spark):
+                pass
+    finally:
+        leave.set()
+        holder.join(60)
+    assert errors == []
+    assert spark.conf.get("spark.sql.shuffle.partitions") == batch
+    with m._stream_shuffle(spark):  # free again once the holder left
+        pass

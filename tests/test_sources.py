@@ -9,7 +9,7 @@ DERBY = {"driver": "org.apache.derby.jdbc.EmbeddedDriver"}
 def test_jdbc_range_partitioned_read(spark, tmp_path):
     """Real JDBC round-trip against embedded Derby (ships in Spark's jars):
     the bounds query must fan the read out into disjoint range partitions."""
-    from baskerville_spark.sources.registry import read_jdbc_partitioned
+    from baskerville_spark.gates.registry import read_jdbc_partitioned
 
     url = f"jdbc:derby:{tmp_path}/db;create=true"
     src = spark.range(1000).selectExpr(

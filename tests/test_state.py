@@ -6,7 +6,7 @@ import time
 
 from pyspark.sql import functions as F
 
-from baskerville_spark.runtime.state import (
+from baskerville_spark.gates.state import (
     StateStore,
     enrich_with_state,
     upsert_state,
@@ -69,7 +69,7 @@ def test_streaming_incremental_stats(spark, tmp_path):
     import json
     import os
 
-    from baskerville_spark.streaming.stateful import incremental_group_stats
+    from baskerville_spark.gates.stateful import incremental_group_stats
 
     src = tmp_path / "stream_src"
     os.makedirs(src)
@@ -173,7 +173,7 @@ def test_kafka_shaped_stream_microbatches(spark, tmp_path):
     and (c) decode from_json(value) to exactly the rows that went in."""
     from pyspark.sql import functions as F
 
-    from baskerville_spark.sources.kafka_shaped import (
+    from baskerville_spark.gates.kafka_shaped import (
         KAFKA_WIRE_SCHEMA, decode_json_values, read_kafka_shaped_stream,
         write_kafka_shaped,
     )
@@ -214,11 +214,11 @@ def test_sensitive_split_merge_roundtrip(spark, tmp_path):
     reference's lost-rows warning as data."""
     from pyspark.sql import functions as F
 
-    from baskerville_spark.runtime.sensitive import (
+    from baskerville_spark.gates.sensitive import (
         cache_sensitive,
         merge_sensitive,
     )
-    from baskerville_spark.runtime.state import StateStore
+    from baskerville_spark.gates.state import StateStore
 
     df = spark.createDataFrame(
         [
@@ -255,11 +255,11 @@ def test_sensitive_stash_accumulates_across_batches(spark, tmp_path):
     must still be in the stash (per-key accumulate, newest-write-wins)."""
     from pyspark.sql import functions as F
 
-    from baskerville_spark.runtime.sensitive import (
+    from baskerville_spark.gates.sensitive import (
         cache_sensitive,
         merge_sensitive,
     )
-    from baskerville_spark.runtime.state import StateStore
+    from baskerville_spark.gates.state import StateStore
 
     store = StateStore(str(tmp_path / "stash"))
     keys = ["uuid_request_set"]
@@ -291,7 +291,7 @@ def test_stateful_update_counts_batches_not_chunks():
     invocation, not once per chunk."""
     import pandas as pd
 
-    from baskerville_spark.streaming.stateful import _update as fn
+    from baskerville_spark.gates.stateful import _update as fn
 
     class _FakeState:
         def __init__(self):
@@ -329,7 +329,7 @@ def test_encrypt_decrypt_columns(spark):
     freshness, AAD binding, and the permissive NULL contract."""
     from pyspark.sql import Row
 
-    from baskerville_spark.runtime.sensitive import (
+    from baskerville_spark.gates.sensitive import (
         decrypt_columns,
         encrypt_columns,
     )

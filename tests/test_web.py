@@ -14,7 +14,7 @@ def test_challenge_commands_flow(spark):
 
     from pyspark.sql import functions as F
 
-    from baskerville_spark.functions.web import (
+    from baskerville_spark.gates.web import (
         challenge_commands,
         low_rate_attack,
     )
