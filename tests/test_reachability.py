@@ -526,13 +526,25 @@ def test_every_defaulted_parameter_is_set_by_a_production_call():
 
 
 def _gate_callables(modules):
-    """Names of the callables in ``__spark_entry__._GATES``'s rows."""
+    """``(module, name)`` of the callables in ``__spark_entry__._GATES``'s
+    rows: a bare name is ``__spark_entry__``'s own, or resolves through its
+    ``from M import name``; ``mod.name`` resolves ``mod`` through its
+    imports."""
     m = modules.get("__spark_entry__")
     for stmt in m.tree.body if m else ():
         if isinstance(stmt, ast.Assign) and any(
             isinstance(t, ast.Name) and t.id == "_GATES" for t in stmt.targets
         ):
-            return {row.elts[0].id for row in stmt.value.elts}
+            out = set()
+            for row in stmt.value.elts:
+                chain = _dotted(row.elts[0])
+                targets = getattr(m, "imports", {}).get(chain[0], ())
+                if len(chain) == 1:
+                    defs = [(t[1], t[2]) for t in targets if t[0] == "def"]
+                    out.update(defs or [("__spark_entry__", chain[0])])
+                else:
+                    out.update((t[1], chain[1]) for t in targets if t[0] == "mod")
+            return out
     return set()
 
 
@@ -556,7 +568,7 @@ def unread_params(modules=None):
     out = []
     for name, m in modules.items():
         for qual, fn in _defs(m.tree):
-            if name == "__spark_entry__" and qual in gates:
+            if (name, qual) in gates:
                 continue
             a = fn.args
             params = a.posonlyargs + a.args + a.kwonlyargs + [x for x in (a.vararg, a.kwarg) if x]
@@ -632,7 +644,8 @@ def run(df, kw, y):
 def test_unread_parameter_guard():
     """A parameter no load in its def's body reaches is unread; a nested
     def or lambda reading it, ``self``, ``_``-prefixed names and the gate
-    table's callables are exempt."""
+    table's callables are exempt, whether a row names the callable bare or
+    through the gate module that defines it."""
     src = '''
 def op(df, unused, used, _cb_arg, *args, **kw):
     return lambda: df[used] + len(args)
@@ -649,13 +662,23 @@ def q1_gate(spark, sf_dir):
 def q2_helper(spark, sf_dir):
     return 2
 
-_GATES = ((q1_gate, "SELECT 1"),)
+from baskerville_spark.gates import web
+
+_GATES = ((q1_gate, "SELECT 1"), (web.q3_gate, web.Q3_SQL))
 '''
-    mod = "__spark_entry__"
-    got = unread_params({mod: SimpleNamespace(tree=ast.parse(src))})
+    gate_src = '''
+def q3_gate(spark, sf_dir):
+    return 3
+
+def q4_helper(spark, sf_dir):
+    return 4
+'''
+    mod, gmod = "__spark_entry__", f"{GATES}.web"
+    got = unread_params(_parse({mod: (src, mod), gmod: (gate_src, gmod)}))
     assert got == [
         (mod, "Op.method", "y"), (mod, "Op.method.inner", "z"), (mod, "op", "kw"),
         (mod, "op", "unused"), (mod, "q2_helper", "sf_dir"), (mod, "q2_helper", "spark"),
+        (gmod, "q4_helper", "sf_dir"), (gmod, "q4_helper", "spark"),
     ]
 
 
