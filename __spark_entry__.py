@@ -14,10 +14,8 @@ Synthetic gate fixtures are a per-index ``plant(i)`` run through
 
 from __future__ import annotations
 
-import threading
 import uuid
 from collections.abc import Callable
-from contextlib import contextmanager
 
 import numpy as np
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -25,148 +23,30 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from baskerville_spark import audio as au
+from baskerville_spark.gates import fixtures
+from baskerville_spark.gates.fixtures import (
+    DRIFT_VALUE_EDGES,
+    EVENT_TYPES,
+    _DRIFT_COLS,
+    _drain_to_memory,
+    _drift_agg_sql,
+    _drift_fixture,
+    _drift_frac,
+    _gate_tmp_detach,
+    _q21_sql,
+    _scan_par,
+    _shared_clip_fixture,
+    _split_events_mod3,
+    _stream_shuffle,
+    _t,
+    _verdict_grid,
+)
 from baskerville_spark.generator import PLANT_SCHEMA, planted_clip, rows_from_range
-
-EVENT_TYPES = ["click", "error", "purchase", "signup", "view"]
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
-
-
-def _scan_par(spark: SparkSession, df: DataFrame) -> DataFrame:
-    """Spread a small-file scan across the cluster BEFORE heavy per-row
-    compute (levenshtein / shingle explode / regex normalization / md5).
-
-    The testdata tables are single-file single-rowgroup parquet, so every
-    scan is ONE task and all row work that precedes the first exchange
-    serializes on one core (guide §2.5 input skew: "one huge unsplittable
-    file ... repartition immediately after the read"). Adaptive: the extra
-    round-robin exchange is inserted only when the scan has fewer input
-    files than cores — at real scale (many files ≥ cores) the scan is
-    already parallel and the repartition is skipped, so this never costs a
-    shuffle where the layout is healthy. ``inputFiles`` is driver-side
-    metadata (no job)."""
-    par = spark.sparkContext.defaultParallelism
-    try:
-        n_files = len(df.inputFiles())
-    except Exception:  # non-file sources: leave the plan alone
-        return df
-    return df.repartition(par) if 0 < n_files < par else df
 
 
 def _docs_wide(spark: SparkSession, sf_dir: str) -> DataFrame:
     """documents, scan-parallelized for explode/regex-heavy pipelines."""
     return _scan_par(spark, _t(spark, sf_dir, "documents"))
-
-
-#: held while ``_stream_shuffle`` overrides the session-wide setting
-_STREAM_SHUFFLE_LOCK = threading.Lock()
-
-
-@contextmanager
-def _stream_shuffle(spark: SparkSession):
-    """Context manager sizing ``spark.sql.shuffle.partitions`` — which fixes
-    the streaming STATE-STORE partition count at query start (AQE never
-    coalesces stateful-streaming shuffles the way it does batch ones) — to
-    the protocol gates' data volume: a 3-micro-batch stream over <=100k rows
-    needs a handful of state partitions, not one per core; at 32 each
-    trigger paid 32 state-store commits + 32 near-empty tasks per stateful
-    stage (measured q64: 13.4s -> 5.3s at local[32]). Partition count is a
-    function of state size (guide §2.2), so the gate value is independent of
-    cluster width; production streams size it through their own session
-    conf. Restores the batch setting on exit.
-
-    The override is session-wide, so the gates that use it run serially: a
-    second entry while one holds it raises RuntimeError instead of letting
-    one exit restore the setting under the other's running query."""
-    if not _STREAM_SHUFFLE_LOCK.acquire(blocking=False):
-        raise RuntimeError(
-            "_stream_shuffle entered while another holder overrides the "
-            "session-wide spark.sql.shuffle.partitions; run streaming gates serially"
-        )
-    try:
-        target = min(8, spark.sparkContext.defaultParallelism)
-        old = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", str(target))
-        try:
-            yield
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", old)
-    finally:
-        _STREAM_SHUFFLE_LOCK.release()
-
-
-def _drain_to_memory(spark: SparkSession, stream: DataFrame, mode: str,
-                     tag: str) -> DataFrame:
-    """Drive ``stream`` to completion (``processAllAvailable``) into a
-    uniquely named memory sink under ``_stream_shuffle``; returns the
-    sink's table."""
-    name = f"{tag}_out_{uuid.uuid4().hex[:8]}"
-    with _stream_shuffle(spark):
-        q = stream.writeStream.outputMode(mode).format("memory").queryName(name).start()
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-    return spark.table(name)
-
-
-def _verdict_grid(verdicts: DataFrame) -> DataFrame:
-    """The closed-form-comparable projection of a verdict table that
-    ``_q21_sql`` reproduces: pass/fail as int, rates rounded to 6 dp, and
-    no metric on range checks (their observed max rides the generator's
-    rng)."""
-    return verdicts.select(
-        F.col("part_id").cast("int").alias("part_id"),
-        "check_name",
-        F.col("passed").cast("int").alias("passed"),
-        F.when(
-            ~F.col("check_name").startswith("range:"),
-            F.round(F.col("metric_value"), 6),
-        ).alias("metric"),
-        F.col("n_rows").cast("long").alias("n_rows"),
-        F.col("n_violations").cast("long").alias("n_violations"),
-    )
-
-
-_CLIP_FIXTURES: dict = {}  # frozen GenConfig -> fixture root
-
-
-def _shared_clip_fixture(spark: SparkSession, cfg) -> tuple[str, str]:
-    """Session-scoped generated clip fixture (clips + transcript_ref parquet).
-
-    Seven protocol gates (q21/q61/q82/q95/q98/q122/q143) exercise the SAME
-    deterministic GenConfig(1000, 4) table — ``write_clips`` output is a
-    pure function of cfg, so each process generates it ONCE and the gates
-    share the files READ-ONLY (each gate keeps its own manifest/out dirs;
-    nothing under the fixture dir is ever mutated). This shares INPUT
-    construction only: every gate still computes its full validation /
-    dedup / decode work from the parquet on every invocation, and the
-    fixture lives in a process-private temp dir removed at exit — nothing
-    persists across bench or driver runs. Clips and the transcript dim
-    generate CONCURRENTLY (independent jobs back-fill each other's task
-    tails, guide §2.6). The cache is keyed on the frozen GenConfig itself,
-    so every field that shapes the generated output is part of the key.
-    """
-    import atexit
-    import shutil
-    import tempfile
-    from concurrent.futures import ThreadPoolExecutor
-
-    from baskerville_spark.generator import write_clips, write_transcript_ref
-
-    root = _CLIP_FIXTURES.get(cfg)
-    if root is None:
-        root = tempfile.mkdtemp(prefix="bsk_fixture_")
-        with ThreadPoolExecutor(2) as ex:
-            fc = ex.submit(write_clips, spark, f"{root}/clips", cfg)
-            ft = ex.submit(write_transcript_ref, spark, f"{root}/tref", cfg)
-            fc.result()
-            ft.result()
-        _CLIP_FIXTURES[cfg] = root
-        atexit.register(shutil.rmtree, root, ignore_errors=True)
-    return f"{root}/clips", f"{root}/tref"
 
 
 # ---------------------------------------------------------------------------
@@ -807,92 +687,6 @@ def q21_clip_validation(spark: SparkSession, sf_dir: str) -> DataFrame:
     out.count()
     res.unpersist()
     return out
-
-
-def _q21_sql(n_rows: int = 1000, n_parts: int = 4) -> str:
-    """Closed-form expected verdicts for a generated clip fixture
-    (default q21: n_rows=1000, n_parts=4 → 250 rows/part; partition 0
-    clean, the LAST partition drifted). Parametrized so protocol gates
-    over other fixture shapes (q95: 1250×5) reuse the same derivation —
-    the mod-class disjointness it relies on is re-asserted per shape in
-    tests/test_properties.py.
-
-    Derivation is INDEPENDENT of the engine: each flag below restates the
-    generator's injection rule (generator.py:46-52,101-135) over a
-    generate_series index, then the 14-check × 4-partition verdict grid is
-    assembled from per-part flag counts. Notes on the two rules that
-    interact: a NULL dur_ms suppresses the range injection on the same row
-    (generator.py `elif`); transcript violations need an existing ref row,
-    so a row that is also RI-skipped does not count (transcript_ok is NULL
-    there); RI violations apply to canonical rows only (a duplicated row
-    shares its original's ref entry; in this fixture no dup row's
-    predecessor is RI-skipped, asserted by the disjoint mod classes).
-    """
-    import baskerville_spark.generator as g
-
-    last = n_parts - 1
-    p_of = f"least({last}, (i*{n_parts})//{n_rows})"
-    p_prev = f"least({last}, ((i-1)*{n_parts})//{n_rows})"
-    return f"""
-WITH idx AS (SELECT unnest(generate_series(0, {n_rows - 1})) AS i),
-fl AS (
-  SELECT
-    CAST({p_of} AS INT) AS part_id,
-    ({p_of} = 0) AS clean,
-    (i > 0 AND i % {g.DUP_MOD} = {g.DUP_OFF}
-       AND {p_of} = {p_prev}) AS dup,
-    (i % {g.SNR_MOD} = {g.SNR_OFF}) AS snr_m,
-    (i % {g.TRANS_MOD} = {g.TRANS_OFF}) AS trans_m,
-    (i % {g.NULL_MOD} = {g.NULL_OFF}) AS null_m,
-    (i % {g.RANGE_MOD} = {g.RANGE_OFF}) AS range_m,
-    (i % {g.RI_MOD} = {g.RI_OFF}) AS ri_m,
-    ({p_of} = {last} AND i % {g.SNR_MOD} <> {g.SNR_OFF}
-       AND i % {g.MP3_MOD} = {g.MP3_OFF}) AS mp3
-  FROM idx),
-agg AS (
-  SELECT part_id,
-    COUNT(*) AS n_rows,
-    SUM(CASE WHEN NOT clean AND dup THEN 1 ELSE 0 END) AS n_dup,
-    SUM(CASE WHEN NOT clean AND snr_m THEN 1 ELSE 0 END) AS n_snr,
-    SUM(CASE WHEN NOT clean AND trans_m AND NOT (ri_m AND NOT dup)
-             THEN 1 ELSE 0 END) AS n_trans,
-    SUM(CASE WHEN NOT clean AND null_m THEN 1 ELSE 0 END) AS n_null,
-    SUM(CASE WHEN NOT clean AND range_m AND NOT null_m THEN 1 ELSE 0 END) AS n_range,
-    SUM(CASE WHEN NOT clean AND ri_m AND NOT dup THEN 1 ELSE 0 END) AS n_ri,
-    SUM(CASE WHEN mp3 THEN 1 ELSE 0 END) AS n_mp3
-  FROM fl GROUP BY part_id),
-checks AS (
-  SELECT * FROM (VALUES
-    ('uniqueness'), ('ref_integrity'), ('pattern:clip_id'), ('pattern:codec'),
-    ('snr'), ('decode_error'), ('transcript_eq'),
-    ('null_rate:clip_id'), ('null_rate:codec'), ('null_rate:transcript'),
-    ('null_rate:sr_hz'), ('null_rate:dur_ms'),
-    ('range:dur_ms'), ('range:sr_hz')) v(check_name)),
-grid AS (
-  SELECT part_id, n_rows, check_name,
-         CASE check_name
-           WHEN 'uniqueness' THEN n_dup
-           WHEN 'ref_integrity' THEN n_ri
-           WHEN 'pattern:codec' THEN n_mp3
-           WHEN 'snr' THEN n_snr
-           WHEN 'decode_error' THEN n_mp3
-           WHEN 'transcript_eq' THEN n_trans
-           WHEN 'null_rate:dur_ms' THEN n_null
-           ELSE 0
-         END AS nv,
-         (check_name LIKE 'range:%') AS is_range,
-         CASE check_name WHEN 'range:dur_ms' THEN n_range ELSE 0 END AS range_nv
-  FROM agg CROSS JOIN checks)
-SELECT part_id, check_name,
-       CAST(CASE WHEN is_range THEN range_nv = 0
-                 WHEN check_name LIKE 'null_rate:%' THEN nv * 1.0 / n_rows <= 0.05
-                 ELSE nv = 0 END AS INT) AS passed,
-       CASE WHEN is_range THEN NULL
-            ELSE ROUND(nv * 1.0 / n_rows, 6) END AS metric,
-       CAST(n_rows AS BIGINT) AS n_rows,
-       CASE WHEN is_range THEN NULL ELSE CAST(nv AS BIGINT) END AS n_violations
-FROM grid
-"""
 
 
 def q23_streaming_window_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1645,74 +1439,6 @@ def q43_first_last_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.max_by("event_type", ordk).alias("last_type"),
         F.round(F.min_by(F.col("value"), pord), 4).alias("first_purchase_value"),
     )
-
-
-#: Drift-gate literals shared by the Spark plan and the generated oracle SQL.
-DRIFT_VALUE_EDGES = [0.0, 5.0, 25.0, 100.0, 500.0]
-DRIFT_VALUE_BASE = [0.3, 0.3, 0.2, 0.2]
-DRIFT_TYPE_CATS = ["click", "view", "purchase", "signup", "error"]
-DRIFT_TYPE_BASE = [0.2, 0.2, 0.2, 0.2, 0.2, 0.0]  # + trailing OTHER
-#: (column, bucket-count prefix, non-NULL count, baseline fractions)
-_DRIFT_COLS = (
-    ("value", "v", "n_v", DRIFT_VALUE_BASE),
-    ("event_type", "t", "n_t", DRIFT_TYPE_BASE),
-)
-
-
-def _drift_fixture(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, list]:
-    """(events with a week-of-month ``part_id``, the literal baseline
-    snapshot) that q44 and q127 measure."""
-    from pyspark.sql import Row
-
-    e = _t(spark, sf_dir, "events").withColumn(
-        "part_id",
-        ((F.dayofmonth(F.col("ts").cast("timestamp")) - 1) / 7).cast("int"),
-    )
-    baseline = [
-        Row(column_name="value", kind="numeric", bin_edges=DRIFT_VALUE_EDGES,
-            categories=None, bin_fractions=DRIFT_VALUE_BASE, quantiles=None, n=1000),
-        Row(column_name="event_type", kind="categorical", bin_edges=None,
-            categories=DRIFT_TYPE_CATS, bin_fractions=DRIFT_TYPE_BASE,
-            quantiles=None, n=1000),
-    ]
-    return e, baseline
-
-
-def _drift_agg_sql() -> str:
-    """The ``base`` and ``agg`` CTEs of the q44/q127 oracles: per
-    part_id, the non-NULL counts ``n_v``/``n_t`` and the bucket counts
-    ``v0..`` of the value bins and ``t0..`` of the event types (OTHER
-    last)."""
-    inner = DRIFT_VALUE_EDGES[1:-1]
-    vbucket = " + ".join(f"(CASE WHEN value >= {repr(e)} THEN 1 ELSE 0 END)" for e in inner)
-    v_sums = ",\n    ".join(
-        f"SUM(CASE WHEN value IS NOT NULL AND ({vbucket}) = {i} THEN 1 ELSE 0 END) AS v{i}"
-        for i in range(len(inner) + 1)
-    )
-    cats = DRIFT_TYPE_CATS
-    t_sums = ",\n    ".join(
-        f"SUM(CASE WHEN event_type = '{c}' THEN 1 ELSE 0 END) AS t{i}"
-        for i, c in enumerate(cats)
-    )
-    in_list = ", ".join(f"'{c}'" for c in cats)
-    t_sums += (
-        f",\n    SUM(CASE WHEN event_type IS NOT NULL AND event_type NOT IN ({in_list})"
-        f" THEN 1 ELSE 0 END) AS t{len(cats)}"
-    )
-    return f"""
-WITH base AS (
-  SELECT CAST((day(ts) - 1) // 7 AS INT) AS part_id, value, event_type FROM events),
-agg AS (
-  SELECT part_id,
-    COUNT(value) AS n_v,
-    {v_sums},
-    COUNT(event_type) AS n_t,
-    {t_sums}
-  FROM base GROUP BY part_id)"""
-
-
-def _drift_frac(pfx: str, i: int, n: str) -> str:
-    return f"{pfx}{i} * 1.0 / GREATEST({n}, 1)"
 
 
 def q44_drift_verdicts(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2789,38 +2515,6 @@ SELECT user_id, prediction, low_rate_attack,
 FROM verdicts
 WHERE (prediction = 1 OR low_rate_attack = 1) AND user_id % 13 <> 0
 """
-
-
-# ---------------------------------------------------------------------------
-# Q61 — resumable runtime under the hash gate (north rule: "resumable from
-#       checkpoint with per-partition lineage"; reference Runtime ledger
-#       db/models.py:41-75, completion update base_spark.py:567-579)
-# ---------------------------------------------------------------------------
-
-def _gate_tmp_detach(df: DataFrame, tmp: str) -> DataFrame:
-    """Materialize a (small) gate result, then delete its temp workspace:
-    the returned frame would otherwise lazily re-read parquet under ``tmp``
-    on every later action, and repeated suite runs would accumulate temp
-    trees (q45's established persist+count-then-rmtree pattern)."""
-    import shutil
-
-    out = df.persist()
-    out.count()
-    shutil.rmtree(tmp, ignore_errors=True)
-    return out
-
-
-def _split_events_mod3(e: DataFrame, src: str) -> None:
-    """One parquet file per micro-batch: ``event_id mod 3`` splits the
-    events table into 3 deterministic stream files (q45's broker-free
-    idiom; shared by the q62/q64 fixtures so they cannot diverge)."""
-    for i in range(3):
-        (
-            e.where(F.col("event_id") % 3 == i)
-            .coalesce(1)
-            .write.mode("append")
-            .parquet(src)
-        )
 
 
 def q61_resume_verdicts(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -7846,7 +7540,7 @@ FROM a
 # ---------------------------------------------------------------------------
 
 _GATES = (
-    (q21_clip_validation, _q21_sql),
+    (q21_clip_validation, fixtures._q21_sql),
     (q100_corpus_split, _Q100_SQL),
     (q101_file_skipping, _Q101_SQL),
     (q102_zorder, _Q102_SQL),
@@ -7953,7 +7647,7 @@ _GATES = (
     (q59_anomaly_thresholds, _Q59_SQL),
     (q60_challenge_commands, _Q60_SQL),
     # same closed-form grid as q21: resume must reproduce the one-shot run
-    (q61_resume_verdicts, _q21_sql),
+    (q61_resume_verdicts, fixtures._q21_sql),
     (q62_feature_loop, _Q62_SQL),
     (q63_sensitive_roundtrip, _Q63_SQL),
     (q64_stateful_stream_stats, _Q64_SQL),
