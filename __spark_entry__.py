@@ -23,7 +23,19 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from baskerville_spark import audio as au
-from baskerville_spark.gates import fixtures, validation, web
+from baskerville_spark.gates import (
+    bloom,
+    bpe,
+    dedup,
+    fixtures,
+    graph,
+    packing,
+    similarity,
+    text,
+    uniqueness,
+    validation,
+    web,
+)
 from baskerville_spark.gates.fixtures import (
     DRIFT_VALUE_EDGES,
     EVENT_TYPES,
@@ -34,7 +46,6 @@ from baskerville_spark.gates.fixtures import (
     _drift_frac,
     _gate_tmp_detach,
     _q21_sql,
-    _scan_par,
     _shared_clip_fixture,
     _split_events_mod3,
     _stream_shuffle,
@@ -42,292 +53,6 @@ from baskerville_spark.gates.fixtures import (
     _verdict_grid,
 )
 from baskerville_spark.generator import PLANT_SCHEMA, planted_clip, rows_from_range
-
-
-def _docs_wide(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """documents, scan-parallelized for explode/regex-heavy pipelines."""
-    return _scan_par(spark, _t(spark, sf_dir, "documents"))
-
-
-# ---------------------------------------------------------------------------
-# Q11-Q13 — text analysis (functions/text.py)
-# ---------------------------------------------------------------------------
-
-def q11_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from baskerville_spark.gates.text import fingerprint
-
-    d = _t(spark, sf_dir, "documents")
-    return fingerprint(d).select(F.col("id").alias("doc_id"), "fingerprint")
-
-
-_Q11_SQL = """
-SELECT doc_id,
-       md5(array_to_string(
-         list_sort(list_distinct(
-           list_filter(
-             string_split_regex(regexp_replace(lower(text), '[^a-z0-9\\s]', ' ', 'g'), '\\s+'),
-             x -> x <> ''))),
-         ' ')) AS fingerprint
-FROM documents
-"""
-
-
-def q12_quality_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from baskerville_spark.gates.text import quality_features
-
-    d = _t(spark, sf_dir, "documents")
-    q = quality_features(d)
-    return q.select(
-        F.col("id").alias("doc_id"),
-        "token_count_ws",
-        "token_count_bpe",
-        "n_chars",
-        F.round("alpha_ratio", 4).alias("alpha_ratio"),
-        F.round("digit_ratio", 4).alias("digit_ratio"),
-        F.round("mean_token_len", 4).alias("mean_token_len"),
-        F.round("stopword_ratio_en", 4).alias("stopword_ratio_en"),
-    )
-
-
-_Q12_SQL = """
-WITH t AS (
-  SELECT doc_id, text,
-         string_split_regex(trim(text), '\\s+') AS toks,
-         length(text) AS n_chars
-  FROM documents)
-SELECT doc_id,
-       len(toks) AS token_count_ws,
-       len(regexp_extract_all(lower(text), '[a-z0-9]{1,4}|[^a-z0-9\\s]')) AS token_count_bpe,
-       n_chars,
-       ROUND(length(regexp_replace(text, '[^A-Za-z]', '', 'g')) * 1.0 / greatest(n_chars, 1), 4) AS alpha_ratio,
-       ROUND(length(regexp_replace(text, '[^0-9]', '', 'g')) * 1.0 / greatest(n_chars, 1), 4) AS digit_ratio,
-       ROUND(n_chars * 1.0 / greatest(len(toks), 1), 4) AS mean_token_len,
-       ROUND(len(list_intersect(list_distinct(list_transform(toks, x -> lower(x))),
-                                ['the','and','of','to','a','in','is','it','that','was'])) * 1.0
-             / greatest(len(list_distinct(list_transform(toks, x -> lower(x)))), 1), 4)
-         AS stopword_ratio_en
-FROM t
-"""
-
-
-def q13_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from baskerville_spark.gates.text import lang_id
-
-    d = _t(spark, sf_dir, "documents")
-    return lang_id(d).select(F.col("id").alias("doc_id"), "pred_lang", "lang_hits")
-
-
-def _langid_sql() -> str:
-    from baskerville_spark.gates.text import STOPWORDS
-
-    score = {
-        lang: (
-            "len(list_filter(string_split_regex(lower(text), '\\s+'), "
-            f"x -> list_contains([{', '.join(repr(w) for w in STOPWORDS[lang])}], x)))"
-        )
-        for lang in STOPWORDS
-    }
-    langs_desc = sorted(STOPWORDS, reverse=True)  # matches Spark struct-max tie-break
-    cases = []
-    for i, lang in enumerate(langs_desc):
-        others = langs_desc[i + 1 :]
-        if others:
-            cond = " AND ".join(f"s_{lang} >= s_{o}" for o in others)
-            cases.append(f"WHEN {cond} THEN '{lang}'")
-        else:
-            cases.append(f"ELSE '{lang}'")
-    case_sql = "CASE " + " ".join(cases) + " END"
-    greatest = "greatest(" + ", ".join(f"s_{l}" for l in sorted(STOPWORDS)) + ")"
-    scores_sql = ", ".join(f"{expr} AS s_{lang}" for lang, expr in score.items())
-    return f"""
-WITH s AS (SELECT doc_id, {scores_sql} FROM documents)
-SELECT doc_id, {case_sql} AS pred_lang, {greatest} AS lang_hits FROM s
-"""
-
-
-# ---------------------------------------------------------------------------
-# Q14/Q22 — similarity search (functions/similarity.py)
-# ---------------------------------------------------------------------------
-
-def q14_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from baskerville_spark.gates.similarity import cosine_topk
-
-    emb = _t(spark, sf_dir, "embeddings")
-    qvec = [float(x) for x in emb.where("vec_id = 0").select("embedding").first()[0]]
-    top = cosine_topk(emb, qvec)
-    return top.select(F.col("id").alias("vec_id"), F.round("cosine_sim", 4).alias("cosine_sim"))
-
-
-_Q14_SQL = """
-WITH q AS (SELECT embedding AS e FROM embeddings WHERE vec_id = 0)
-SELECT b.vec_id,
-       ROUND(
-         list_sum(list_transform(generate_series(1, len(b.embedding)),
-                  i -> CAST(b.embedding[i] AS DOUBLE) * CAST(q.e[i] AS DOUBLE)))
-         / (sqrt(list_sum(list_transform(b.embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))
-            * sqrt(list_sum(list_transform(q.e, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))),
-         4) AS cosine_sim
-FROM embeddings b, q
-ORDER BY cosine_sim DESC, b.vec_id ASC
-LIMIT 10
-"""
-
-
-def q22_vector_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from baskerville_spark.gates.similarity import brute_force_pairs
-
-    # repartition: the testdata table is one parquet file -> one scan task,
-    # which would serialize the O(n^2) pair loop on a single core
-    emb = _t(spark, sf_dir, "embeddings").repartition(
-        spark.sparkContext.defaultParallelism
-    )
-    p = brute_force_pairs(emb)
-    return p.select("id_a", "id_b", F.round("cosine_sim", 4).alias("cosine_sim"))
-
-
-_Q22_SQL = """
-SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-       ROUND(
-         list_sum(list_transform(generate_series(1, len(a.embedding)),
-                  i -> CAST(a.embedding[i] AS DOUBLE) * CAST(b.embedding[i] AS DOUBLE)))
-         / (sqrt(list_sum(list_transform(a.embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))
-            * sqrt(list_sum(list_transform(b.embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))),
-         4) AS cosine_sim
-FROM embeddings a JOIN embeddings b ON a.vec_id < b.vec_id
-WHERE list_sum(list_transform(generate_series(1, len(a.embedding)),
-               i -> CAST(a.embedding[i] AS DOUBLE) * CAST(b.embedding[i] AS DOUBLE)))
-      / (sqrt(list_sum(list_transform(a.embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))
-         * sqrt(list_sum(list_transform(b.embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))))
-      >= 0.45
-"""
-
-
-# ---------------------------------------------------------------------------
-# Q15/Q16 — dedup (functions/dedup.py)
-# ---------------------------------------------------------------------------
-
-def q15_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from baskerville_spark.gates.dedup import ngram_jaccard_pairs
-
-    d = _docs_wide(spark, sf_dir)
-    # max_df=20: the stop-shingle guard is ACTIVE at bench scale (sf0.1 max
-    # 3-gram df is 25) and a no-op at the sf0.01 gate (max df 7) — the
-    # exercised plan is the bounded one, not the quadratic one.
-    p = ngram_jaccard_pairs(d)
-    return p.select("id_a", "id_b", F.round("jaccard", 6).alias("jaccard"))
-
-
-_Q15_SQL = """
-WITH toks AS (
-  SELECT doc_id, string_split_regex(lower(text), '\\s+') AS t FROM documents),
-idx AS (
-  SELECT doc_id, t, unnest(generate_series(1, greatest(len(t) - 2, 0))) AS i
-  FROM toks WHERE len(t) >= 3),
-sh0 AS (SELECT DISTINCT doc_id, array_to_string(t[i:i+2], ' ') AS shingle FROM idx),
-keep AS (SELECT shingle FROM sh0 GROUP BY shingle HAVING COUNT(*) <= 20),
-sh AS (SELECT sh0.doc_id, sh0.shingle FROM sh0 JOIN keep USING (shingle)),
-sizes AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY 1),
-common AS (
-  SELECT a.doc_id AS id_a, b.doc_id AS id_b, COUNT(*) AS c
-  FROM sh a JOIN sh b USING (shingle)
-  WHERE a.doc_id < b.doc_id GROUP BY 1, 2)
-SELECT id_a, id_b,
-       ROUND(c * 1.0 / (sa.n + sb.n - c), 6) AS jaccard
-FROM common
-JOIN sizes sa ON sa.doc_id = id_a
-JOIN sizes sb ON sb.doc_id = id_b
-WHERE c * 1.0 / (sa.n + sb.n - c) >= 0.8
-"""
-
-
-def q16_exact_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from baskerville_spark.gates.dedup import exact_duplicates
-
-    d = _t(spark, sf_dir, "documents")
-    return exact_duplicates(d).select("text_hash", "dup_count")
-
-
-_Q16_SQL = """
-SELECT md5(text) AS text_hash, COUNT(*) AS dup_count FROM documents
-GROUP BY md5(text) HAVING COUNT(*) > 1
-"""
-
-
-# ---------------------------------------------------------------------------
-# Q19-Q21, Q23 — MinHash/SimHash sketches, clip validation, streaming windows
-# ---------------------------------------------------------------------------
-
-def q19_minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MinHash-LSH near-dup pairs, verified candidates-only. The oracle is
-    the EXACT (unguarded) Jaccard pair SQL — a green row proves the banded
-    MinHash misses no true pair at this threshold on the fixture (recall
-    1.0), while the Spark plan touches only candidate docs."""
-    from baskerville_spark.gates.dedup import minhash_lsh_pairs
-
-    d = _docs_wide(spark, sf_dir)
-    p = minhash_lsh_pairs(d)
-    return p.select("id_a", "id_b", F.round("jaccard", 6).alias("jaccard"))
-
-
-_Q19_SQL = """
-WITH toks AS (
-  SELECT doc_id, string_split_regex(lower(text), '\\s+') AS t FROM documents),
-idx AS (
-  SELECT doc_id, t, unnest(generate_series(1, greatest(len(t) - 2, 0))) AS i
-  FROM toks WHERE len(t) >= 3),
-sh AS (SELECT DISTINCT doc_id, array_to_string(t[i:i+2], ' ') AS shingle FROM idx),
-sizes AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY 1),
-common AS (
-  SELECT a.doc_id AS id_a, b.doc_id AS id_b, COUNT(*) AS c
-  FROM sh a JOIN sh b USING (shingle)
-  WHERE a.doc_id < b.doc_id GROUP BY 1, 2)
-SELECT id_a, id_b,
-       ROUND(c * 1.0 / (sa.n + sb.n - c), 6) AS jaccard
-FROM common
-JOIN sizes sa ON sa.doc_id = id_a
-JOIN sizes sb ON sb.doc_id = id_b
-WHERE c * 1.0 / (sa.n + sb.n - c) >= 0.8
-"""
-
-
-def q20_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-document SimHash fingerprints (SURVEY §2.8 bit ops / LLM-dedup).
-
-    ORACLE-CHECKED since round 3: simhash's only hasher is the SQL-portable
-    60-bit md5 (dedup._token_hash), so DuckDB reproduces every bit of the
-    fingerprint — token hash = ('0x' || substr(md5(tok),1,15))::BIGINT,
-    then the same 60 conditional bit-sums."""
-    from baskerville_spark.gates.dedup import simhash
-
-    d = _docs_wide(spark, sf_dir)
-    return simhash(d).select(F.col("id").alias("doc_id"), "simhash")
-
-
-def _simhash_cte() -> str:
-    """CTEs computing the 60-bit md5 SimHash per document in DuckDB —
-    bit-exact mirror of dedup.simhash."""
-    bit_sums = ",\n         ".join(
-        f"SUM(CASE WHEN ((h >> {i}) & 1) = 1 THEN 1 ELSE -1 END) AS b{i}"
-        for i in range(60)
-    )
-    recon = " + ".join(f"(CASE WHEN b{i} > 0 THEN {1 << i} ELSE 0 END)" for i in range(60))
-    return f"""
-WITH tok AS (
-  SELECT doc_id, unnest(regexp_split_to_array(lower(text), '\\s+')) AS tok
-  FROM documents
-), h AS (
-  SELECT doc_id, ('0x' || substr(md5(tok), 1, 15))::BIGINT AS h
-  FROM tok WHERE tok <> ''
-), bits AS (
-  SELECT doc_id, {bit_sums}
-  FROM h GROUP BY doc_id
-), sim AS (
-  SELECT doc_id, CAST({recon} AS BIGINT) AS simhash FROM bits
-)"""
-
-
-def _q20_sql() -> str:
-    return _simhash_cte() + "\nSELECT doc_id, simhash FROM sim"
 
 
 def q23_streaming_window_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -447,93 +172,6 @@ FROM s FULL OUTER JOIN u ON s.user_id = u.user_id
 """
 
 
-# ---------------------------------------------------------------------------
-# Q32-Q37 — SRP-LSH ANN pairs, first/last touch, map ops, simhash Hamming
-#           join, native session windows, geo-localize pandas-UDF lookup
-# ---------------------------------------------------------------------------
-
-def _augmented_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """embeddings ∪ deterministic near-duplicate twins: every 10th vector
-    gets a twin (id + 1_000_000) with odd-index components scaled by 0.95
-    (cosine ≈ 0.9997 to its base; background pairs top out ≈ 0.66). The
-    perturbation is plain arithmetic so the DuckDB oracle reproduces it.
-    Repartitioned: the single-file testdata scan would otherwise serialize
-    signature computation on one core."""
-    emb = _t(spark, sf_dir, "embeddings").repartition(
-        spark.sparkContext.defaultParallelism
-    )
-    base = emb.select(
-        "vec_id", F.transform("embedding", lambda x: x.cast("double")).alias("embedding")
-    )
-    twins = emb.where(F.col("vec_id") % 10 == 0).select(
-        (F.col("vec_id") + 1000000).alias("vec_id"),
-        F.transform(
-            "embedding",
-            lambda x, i: F.when(i % 2 == 1, x.cast("double") * 0.95).otherwise(
-                x.cast("double")
-            ),
-        ).alias("embedding"),
-    )
-    return base.unionByName(twins)
-
-
-def q32_srp_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """All-pairs vector near-dup detection on the SCALE path: SRP/hyperplane
-    LSH buckets → candidate equi-join → exact-cosine verify. The oracle is
-    the brute-force SQL — a green row proves LSH output == exact at this
-    threshold (recall 1.0 on the fixture), making q22 the baseline it
-    claims to be."""
-    from baskerville_spark.gates.similarity import hyperplane_lsh_pairs
-
-    aug = _augmented_embeddings(spark, sf_dir)
-    p = hyperplane_lsh_pairs(aug)
-    return p.select("id_a", "id_b", F.round("cosine_sim", 4).alias("cosine_sim"))
-
-
-_Q32_SQL = """
-WITH aug AS (
-  SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
-  FROM embeddings
-  UNION ALL
-  SELECT vec_id + 1000000,
-         list_transform(generate_series(1, len(embedding)),
-                        i -> CASE WHEN i % 2 = 0 THEN CAST(embedding[i] AS DOUBLE) * 0.95
-                                  ELSE CAST(embedding[i] AS DOUBLE) END)
-  FROM embeddings WHERE vec_id % 10 = 0),
-p AS (
-  SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-         list_sum(list_transform(generate_series(1, len(a.e)), i -> a.e[i] * b.e[i]))
-         / (sqrt(list_sum(list_transform(a.e, x -> x * x)))
-            * sqrt(list_sum(list_transform(b.e, x -> x * x)))) AS c
-  FROM aug a JOIN aug b ON a.vec_id < b.vec_id)
-SELECT id_a, id_b, ROUND(c, 4) AS cosine_sim FROM p WHERE c >= 0.9
-"""
-
-
-def q35_simhash_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SimHash Hamming-neighbour pairs via the 15-bit chunk pigeonhole join
-    (exercises dedup.simhash_near_dups's banded equi-join — never all-pairs).
-
-    ORACLE-CHECKED since round 3 via the md5 hasher (see q20): the oracle
-    recomputes every fingerprint and brute-forces all pairs in DuckDB, so a
-    hash match proves the banded equi-join finds EXACTLY the Hamming<=3 set
-    (pigeonhole losslessness demonstrated on real data, not just the planted
-    pytest pairs)."""
-    from baskerville_spark.gates.dedup import simhash_near_dups
-
-    d = _docs_wide(spark, sf_dir)
-    return simhash_near_dups(d)
-
-
-def _q35_sql() -> str:
-    return _simhash_cte() + """
-SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-       CAST(bit_count(xor(a.simhash, b.simhash)) AS INT) AS hamming
-FROM sim a JOIN sim b ON a.doc_id < b.doc_id
-WHERE bit_count(xor(a.simhash, b.simhash)) <= 3
-"""
-
-
 def q37_geo_localize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Vectorized pandas-UDF + broadcast lookup-table pattern (reference
     compute_geotime, udfs.py:41-62, minus the tzwhere dependency): a
@@ -559,68 +197,6 @@ SELECT user_id, lon, tz_offset,
        COUNT(CASE WHEN EXTRACT(hour FROM ts + to_hours(tz_offset)) < 6
                   THEN 1 END) AS n_night_events
 FROM y GROUP BY 1, 2, 3
-"""
-
-
-def _clustered_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Planted-cluster fixture for the IVF gate: vector i is scaled-down
-    noise (×0.05) plus the one-hot-comb center of cluster (vec_id % 8) —
-    component j gets +1.0 when j ≡ vec_id (mod 8). Centers are ~4.0 apart
-    while the noise norm is ~0.4, so the corpus has the cluster structure
-    real embedding corpora have (the structure-free raw fixture was the
-    coarse quantizer's worst case). Plain arithmetic → the DuckDB oracle
-    reproduces the corpus exactly."""
-    emb = _t(spark, sf_dir, "embeddings").repartition(
-        spark.sparkContext.defaultParallelism
-    )
-    planted = F.transform(
-        "embedding",
-        lambda x, j: x.cast("double") * 0.05
-        + F.when(j % 8 == F.col("vec_id") % 8, F.lit(1.0)).otherwise(F.lit(0.0)),
-    )
-    return emb.select("vec_id", planted.alias("embedding"))
-
-
-def q38_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF approximate nearest neighbors (the ANN scale path besides LSH):
-    deterministic Lloyd-trained coarse quantizer → Arrow-batched cluster
-    assignment → probe-limited brute force over nprobe=2 of 8 centroids
-    (≤25% of the corpus scanned; selectivity plan-asserted in
-    test_functions.test_ivf_probe_prunes_clusters). Oracle = the exact
-    top-k SQL over the same planted-cluster corpus, so a green row proves
-    recall 1.0 while the probe filter genuinely prunes — the round-2 gate
-    probed 12/16 on structure-free vectors, which proved little.
-
-    At scale the assignment is a write-once index column: the ``cluster IN
-    (probe set)`` predicate partition/cluster-prunes the scan."""
-    from baskerville_spark.gates.similarity import ivf_topk, train_ivf_centroids
-
-    emb = _clustered_embeddings(spark, sf_dir)
-    # the md5-threshold sampler is independent of the vec_id%8 cluster key
-    # (the old id%sample_mod filter had to be coprime with it), and the
-    # driver-side sample is hard-capped at 256·n_centroids vectors
-    cent = train_ivf_centroids(emb)
-    qvec = [float(x) for x in emb.where("vec_id = 0").select("embedding").first()[0]]
-    top = ivf_topk(emb, qvec, cent)
-    return top.select(F.col("id").alias("vec_id"), F.round("cosine_sim", 4).alias("cosine_sim"))
-
-
-_Q38_SQL = """
-WITH t AS (
-  SELECT vec_id,
-         list_transform(generate_series(1, len(embedding)),
-             j -> CAST(embedding[j] AS DOUBLE) * 0.05
-                  + CASE WHEN (j - 1) % 8 = vec_id % 8 THEN 1.0 ELSE 0.0 END) AS e
-  FROM embeddings),
-q AS (SELECT e AS qe FROM t WHERE vec_id = 0),
-scored AS (
-  SELECT vec_id,
-         list_sum(list_transform(generate_series(1, len(e)), j -> e[j] * qe[j]))
-         / (sqrt(list_sum(list_transform(e, x -> x * x)))
-            * sqrt(list_sum(list_transform(qe, x -> x * x)))) AS c
-  FROM t, q)
-SELECT vec_id, ROUND(c, 4) AS cosine_sim
-FROM scored ORDER BY c DESC, vec_id ASC LIMIT 10
 """
 
 
@@ -735,29 +311,6 @@ FROM f WHERE j % 5 = 0
 UNION ALL
 SELECT 'vid_' || lpad(CAST(i AS VARCHAR), 4, '0'), NULL, NULL, 0
 FROM v WHERE i % 13 = 0
-"""
-
-
-def q42_dup_exemplars(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Salted two-phase bounded-exemplar aggregation (the case where
-    salting is load-bearing — list state, not counts; see
-    checks/uniqueness.duplicate_exemplars and docs/PLANS.md)."""
-    from baskerville_spark.gates.uniqueness import duplicate_exemplars
-
-    o = _t(spark, sf_dir, "orders")
-    out = duplicate_exemplars(o, key="o_custkey", id_col="o_orderkey")
-    # canonical string form: array cells hash differently across engines
-    return out.select(
-        "o_custkey",
-        "dup_count",
-        F.concat_ws(",", F.col("exemplar_ids")).alias("exemplar_ids"),
-    )
-
-
-_Q42_SQL = """
-SELECT o_custkey, COUNT(*) AS dup_count,
-       array_to_string((list_sort(list(o_orderkey)))[1:5], ',') AS exemplar_ids
-FROM orders GROUP BY o_custkey HAVING COUNT(*) > 1
 """
 
 
@@ -937,94 +490,6 @@ f AS (
 SELECT lang, COUNT(*) AS n_docs, CAST(SUM(n_chars) AS BIGINT) AS sum_chars,
        CAST(SUM(ingest_flag) AS BIGINT) AS n_flag
 FROM f GROUP BY lang
-"""
-
-
-# ---------------------------------------------------------------------------
-# Q51/Q52 — normalization-aware near-exact dedup and heavy-hitter tokens
-#           (training-data staples beyond byte-identical dedup)
-# ---------------------------------------------------------------------------
-
-def q51_normalized_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Near-exact dedup through TEXT NORMALIZATION (lowercase, strip
-    non-alphanumerics, collapse whitespace) — the standard first rung of a
-    training-data dedup ladder above byte-identical (q16) and below
-    MinHash (q19). Fixture plants case/punctuation variants: every 7th
-    document is cloned (doc_id + 100000) as UPPER(text) + ' !!!', raw-byte
-    distinct but normalization-equal, so each planted pair MUST collapse to
-    one group. Runs through the same count-first salted
-    ``exact_duplicates`` machinery on the normalized column; ids ride out
-    as a comma-joined string (array-hashing hazard — see check_oracle)."""
-    from baskerville_spark.gates.dedup import exact_duplicates
-
-    d = _scan_par(spark, _t(spark, sf_dir, "documents").select("doc_id", "text"))
-    clones = d.where(F.col("doc_id") % 7 == 0).select(
-        (F.col("doc_id") + 100_000).alias("doc_id"),
-        F.concat(F.upper(F.col("text")), F.lit(" !!!")).alias("text"),
-    )
-    normed = d.unionByName(clones).select(
-        "doc_id",
-        F.trim(
-            F.regexp_replace(
-                F.regexp_replace(F.lower(F.col("text")), "[^a-z0-9 ]", ""),
-                " +",
-                " ",
-            )
-        ).alias("norm_text"),
-    )
-    groups = exact_duplicates(normed, text_col="norm_text", exemplar_k=8)
-    return groups.select(
-        "text_hash",
-        "dup_count",
-        F.concat_ws(",", F.transform("ids", lambda x: x.cast("string"))).alias("ids"),
-    )
-
-
-_Q51_SQL = """
-WITH base AS (
-  SELECT doc_id, text FROM documents
-  UNION ALL
-  SELECT doc_id + 100000, upper(text) || ' !!!' FROM documents WHERE doc_id % 7 = 0),
-normed AS (
-  SELECT doc_id,
-         trim(regexp_replace(regexp_replace(lower(text), '[^a-z0-9 ]', '', 'g'),
-                             ' +', ' ', 'g')) AS norm_text
-  FROM base),
-grp AS (
-  -- norm_text IS NOT NULL mirrors the engine's documented rule (a NULL
-  -- text never forms a duplicate group — the equi semi-join drops it);
-  -- without it DuckDB would emit a (NULL, n) group the engine never does
-  SELECT md5(norm_text) AS text_hash, COUNT(*) AS dup_count,
-         (array_agg(doc_id ORDER BY doc_id))[1:8] AS id_list
-  FROM normed WHERE norm_text IS NOT NULL
-  GROUP BY md5(norm_text) HAVING COUNT(*) > 1)
-SELECT text_hash, dup_count, array_to_string(id_list, ',') AS ids FROM grp
-"""
-
-
-def q52_heavy_hitter_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Corpus-level heavy hitters: top-20 whitespace tokens by document
-    frequency — the vocabulary/stop-word probe every text pipeline runs
-    before filtering. explode(split) → one hash aggregate (map-side
-    combined: token counts are algebraic, immune to hot tokens) →
-    TakeOrdered 20 with a deterministic (count desc, token asc) tie-break;
-    no global sort materializes."""
-    d = _t(spark, sf_dir, "documents")
-    return (
-        d.select(F.explode(F.split(F.col("text"), " ")).alias("token"))
-        .where(F.col("token") != "")
-        .groupBy("token")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .orderBy(F.desc("n"), F.asc("token"))
-        .limit(20)
-    )
-
-
-_Q52_SQL = """
-SELECT token, COUNT(*) AS n
-FROM (SELECT unnest(string_split(text, ' ')) AS token FROM documents)
-WHERE token <> ''
-GROUP BY token ORDER BY n DESC, token ASC LIMIT 20
 """
 
 
@@ -1744,614 +1209,6 @@ FROM events GROUP BY user_id
 """
 
 
-# ---------------------------------------------------------------------------
-# Q65 — transitive dedup clustering (connected components over a UNION of
-#       similarity relations; functions/graph.py — a from-scratch extension:
-#       the reference dedups per-key only, spark/helpers.py:54-75)
-# Q66 — sliding event-time windows (overlapping F.window; SURVEY §2.10's
-#       tumbling gate q23 generalized to slide < duration)
-# ---------------------------------------------------------------------------
-
-def q65_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Multi-relation dedup clustering: three fingerprint relations over
-    the documents table — full normalized text, first-64-normalized-chars
-    prefix, last-64 suffix — are unioned into one bucket-membership list;
-    star edges + min-label connected components (functions/graph.py) give
-    every document a cluster_id = min reachable doc, the canonical
-    survivor of keep-one-per-cluster dedup.
-
-    Fixture plants a 4-document component per every-10th doc: a case/
-    punctuation clone (+100000, joins via the FULL relation), a
-    prefix-preserving truncation with a unique tail (+300000, joins ONLY
-    via the prefix relation), and a suffix-preserving clone with a unique
-    head (+400000, ONLY the suffix relation) — the truncation and the
-    suffix clone share no relation with each other, so their membership
-    in one cluster is provable only transitively through the base doc:
-    exactly the closure the pairwise gates (q16/q19/q20/q51) cannot
-    express. The DuckDB oracle recomputes the closure with a recursive
-    CTE; prefix/suffix fingerprints are defined only for docs with >= 64
-    normalized chars (both engines filter identically)."""
-    from baskerville_spark.gates.graph import dedup_clusters
-
-    d = _scan_par(spark, _t(spark, sf_dir, "documents").select("doc_id", "text"))
-    did = F.col("doc_id").cast("string")
-    tenth = F.col("doc_id") % 10 == 0
-    # Corpus and membership as SINGLE-branch conditional explodes instead of
-    # 4- and 3-way unions: the union form evaluated the scan + normalization
-    # 12 branch-combinations deep (each union leg is its own stage fan-out
-    # of tiny tasks, and the regex normalization ran once per leg); the
-    # explode computes each row's variants and bucket list in ONE pass —
-    # same multiset of (doc_id, text) and (doc_id, bucket) rows (the
-    # when()-guards restate each leg's filter; array_compact drops the
-    # non-matching legs), and downstream groupBys are order-insensitive.
-    variant = F.array_compact(
-        F.array(
-            F.struct(F.col("doc_id"), F.col("text")),
-            F.when(
-                tenth,
-                F.struct(
-                    (F.col("doc_id") + 100_000).alias("doc_id"),
-                    F.concat(F.upper("text"), F.lit(" !!!")).alias("text"),
-                ),
-            ),
-            F.when(
-                tenth,
-                F.struct(
-                    (F.col("doc_id") + 300_000).alias("doc_id"),
-                    F.concat(
-                        F.left("text", F.lit(120)), F.lit(" qq unique tail "), did
-                    ).alias("text"),
-                ),
-            ),
-            F.when(
-                tenth,
-                F.struct(
-                    (F.col("doc_id") + 400_000).alias("doc_id"),
-                    F.concat(
-                        F.lit("zq head "), did, F.lit(" "), F.right("text", F.lit(160))
-                    ).alias("text"),
-                ),
-            ),
-        )
-    )
-    corpus = d.select(F.explode(variant).alias("v")).select("v.doc_id", "v.text")
-    nt = F.trim(
-        F.regexp_replace(
-            F.regexp_replace(F.lower("text"), "[^a-z0-9 ]", ""), " +", " "
-        )
-    )
-    normed = corpus.select("doc_id", nt.alias("nt"))
-    ntc = F.col("nt")
-    long_enough = F.length("nt") >= 64
-    buckets = F.array_compact(
-        F.array(
-            F.when(
-                ntc.isNotNull(), F.concat(F.lit("f:"), F.md5("nt"))
-            ),
-            F.when(
-                long_enough, F.concat(F.lit("p:"), F.md5(F.left("nt", F.lit(64))))
-            ),
-            F.when(
-                long_enough, F.concat(F.lit("s:"), F.md5(F.right("nt", F.lit(64))))
-            ),
-        )
-    )
-    membership = normed.select("doc_id", F.explode(buckets).alias("bucket"))
-    # Persist the narrow (doc_id, bucket) rows: the star-edge and seed jobs
-    # inside dedup_clusters each evaluate membership once, and each
-    # evaluation replays the normalization regex over the corpus. The CC
-    # loop checkpoints its labels, so the cache can be dropped on return.
-    membership = membership.persist()
-    membership.count()
-    out = dedup_clusters(
-        membership, id_col="doc_id", vertices=corpus
-    ).select(
-        F.col("id").alias("doc_id"), "cluster_id", "cluster_size", "is_canonical"
-    )
-    membership.unpersist()
-    return out
-
-
-_Q65_SQL = """
-WITH RECURSIVE
-tenth AS (SELECT doc_id, text FROM documents WHERE doc_id % 10 = 0),
-corpus AS (
-  SELECT doc_id, text FROM documents
-  UNION ALL
-  SELECT doc_id + 100000, upper(text) || ' !!!' FROM tenth
-  UNION ALL
-  SELECT doc_id + 300000,
-         left(text, 120) || ' qq unique tail ' || CAST(doc_id AS VARCHAR)
-  FROM tenth
-  UNION ALL
-  SELECT doc_id + 400000,
-         'zq head ' || CAST(doc_id AS VARCHAR) || ' ' || right(text, 160)
-  FROM tenth),
-normed AS (
-  SELECT doc_id,
-         trim(regexp_replace(regexp_replace(lower(text), '[^a-z0-9 ]', '', 'g'),
-                             ' +', ' ', 'g')) AS nt
-  FROM corpus),
-rel AS (
-  SELECT doc_id, 'f:' || md5(nt) AS h FROM normed WHERE nt IS NOT NULL
-  UNION ALL
-  SELECT doc_id, 'p:' || md5(left(nt, 64)) FROM normed WHERE length(nt) >= 64
-  UNION ALL
-  SELECT doc_id, 's:' || md5(right(nt, 64)) FROM normed WHERE length(nt) >= 64),
-star AS (SELECT doc_id, MIN(doc_id) OVER (PARTITION BY h) AS root FROM rel),
-edges AS (SELECT DISTINCT doc_id AS a, root AS b FROM star WHERE doc_id <> root),
-sym AS (SELECT a, b FROM edges UNION SELECT b, a FROM edges),
-walk(id, lbl) AS (
-  SELECT doc_id, doc_id FROM corpus
-  UNION
-  SELECT s.b, w.lbl FROM walk w JOIN sym s ON s.a = w.id),
-cc AS (SELECT id, MIN(lbl) AS cluster_id FROM walk GROUP BY id)
-SELECT id AS doc_id, cluster_id,
-       COUNT(*) OVER (PARTITION BY cluster_id) AS cluster_size,
-       (id = cluster_id) AS is_canonical
-FROM cc
-"""
-
-
-# ---------------------------------------------------------------------------
-# Q67 — adversarial-diameter dedup clustering: large-star/small-star CC
-#       (functions/graph.py connected_components_bigstar) on chain graphs
-#       whose diameter defeats per-hop label propagation
-# ---------------------------------------------------------------------------
-
-def q67_chain_clusters_bigstar(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Worst-case cluster topology for label propagation: consecutive
-    doc_ids within each 100-id block are linked pairwise (doc i shares a
-    bucket with i+1), so every component is a PATH of diameter ~99 — the
-    regime where q65's min-label algorithm needs one round per hop and
-    its max_iters guard fires. connected_components_bigstar (the
-    large-star/small-star alternation, Kiveris et al. SoCC'14) converges
-    in O(log n) rounds independent of diameter, and — because rounds
-    depend on diameter, not row count — runs the SAME ~10 rounds at sf0.01
-    and at 10^12 rows. The closed-form oracle needs no recursion: path
-    components over consecutive ids are gaps-and-islands (island =
-    doc_id - row_number within block), robust to any doc_id gaps."""
-    from baskerville_spark.gates.graph import dedup_clusters
-
-    d = _t(spark, sf_dir, "documents").select("doc_id")
-    membership = d.where(F.col("doc_id") % 100 != 99).select(
-        "doc_id", F.col("doc_id").alias("bucket")
-    ).unionByName(
-        d.where(F.col("doc_id") % 100 != 0).select(
-            "doc_id", (F.col("doc_id") - 1).alias("bucket")
-        )
-    )
-    return dedup_clusters(
-        membership,
-        id_col="doc_id",
-        vertices=d,
-        algorithm="bigstar",
-    ).select(
-        F.col("id").alias("doc_id"), "cluster_id", "cluster_size", "is_canonical"
-    )
-
-
-_Q67_SQL = """
-WITH i AS (
-  SELECT doc_id, doc_id // 100 AS g,
-         doc_id - ROW_NUMBER() OVER (PARTITION BY doc_id // 100
-                                     ORDER BY doc_id) AS isl
-  FROM documents)
-SELECT doc_id,
-       MIN(doc_id) OVER (PARTITION BY g, isl) AS cluster_id,
-       COUNT(*) OVER (PARTITION BY g, isl) AS cluster_size,
-       doc_id = MIN(doc_id) OVER (PARTITION BY g, isl) AS is_canonical
-FROM i
-"""
-
-
-# ---------------------------------------------------------------------------
-# Q68 — incremental dedup clustering protocol: batch-1 clusters + the
-#       three-term incremental_membership for batch 2 must reproduce the
-#       SAME closed-form chain clusters as a from-scratch run (q67),
-#       without re-clustering batch 1's internal edges
-# ---------------------------------------------------------------------------
-
-def q68_incremental_chain_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The incremental-reclustering protocol (functions/graph.py
-    incremental_membership) under the hash gate. The q67 chain corpus is
-    ingested in TWO batches — even doc_ids first, odd second; each doc
-    emits only ITS OWN fingerprint rows ((d, d) links-to-next and
-    (d, d-1) links-to-prev within its 100-id block), so batch 2 carries
-    NO rows for the settled even docs. Batch 1 is clustered alone
-    (even-doc pairs); batch 2 then goes through the three-term union —
-    its own rows, the prior labels folded to one bucket per old cluster,
-    and the retained index's rows semi-joined on batch-2 buckets (the
-    bridge without which every odd doc strands as a singleton) — and the
-    final clusters must hash-match the SAME gaps-and-islands oracle as
-    the from-scratch q67 run. Both legs use the large-star/small-star
-    algorithm (the final graph has diameter ~99)."""
-    from baskerville_spark.gates.graph import (
-        dedup_clusters,
-        incremental_membership,
-    )
-
-    d = _t(spark, sf_dir, "documents").select("doc_id")
-    # bucket as string: the prior-label leg emits "prior:<cluster>"
-    # string buckets, and the three-term union must be type-consistent
-    emit = d.where(F.col("doc_id") % 100 != 99).select(
-        "doc_id", F.col("doc_id").cast("string").alias("bucket")
-    ).unionByName(
-        d.where(F.col("doc_id") % 100 != 0).select(
-            "doc_id", (F.col("doc_id") - 1).cast("string").alias("bucket")
-        )
-    )
-    b1 = emit.where(F.col("doc_id") % 2 == 0)
-    b2 = emit.where(F.col("doc_id") % 2 == 1)
-    prior = dedup_clusters(
-        b1,
-        id_col="doc_id",
-        vertices=d.where(F.col("doc_id") % 2 == 0),
-        algorithm="bigstar",
-    ).select("id", "cluster_id")
-    inc_m = incremental_membership(
-        b2,
-        prior.withColumnRenamed("id", "doc_id"),
-        retained_index=b1,
-        id_col="doc_id",
-    )
-    return dedup_clusters(
-        inc_m,
-        id_col="doc_id",
-        vertices=d,
-        algorithm="bigstar",
-    ).select(
-        F.col("id").alias("doc_id"), "cluster_id", "cluster_size", "is_canonical"
-    )
-
-
-# ---------------------------------------------------------------------------
-# Q69 — TF-IDF cosine similarity pairs via an inverted term index
-#       (functions/dedup.tfidf_cosine_pairs — sparse lexical similarity,
-#       no embeddings; the max_df stop-term guard is ACTIVE: the
-#       generator's tiny shared vocabulary appears in ~every doc and is
-#       dropped wholesale, which is exactly the guard's job at scale)
-# ---------------------------------------------------------------------------
-
-def q69_tfidf_cosine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Every doc gets an 8-word doc-unique tail; every 5th doc is cloned
-    (+500000) keeping 6 of the 8 tail words and adding 2 clone-unique
-    ones. After the df > 400 stop-term guard drops the generator's
-    shared vocabulary (each word appears in ~all 600 docs — raw pairwise
-    cosine on this table reaches 0.95 BECAUSE of that vocabulary, which
-    is why the guard is load-bearing), the surviving term space is
-    doc-unique tails only: the emitted pairs are EXACTLY the planted
-    clone pairs, at a cosine mixing df=2 shared-tail weights with df=1
-    singleton weights — the oracle recomputes the full tf·ln(N/df)
-    algebra, not a count. Threshold applied to the round-4 value in both
-    engines (cross-engine float-stability rule)."""
-    from baskerville_spark.gates.dedup import tfidf_cosine_pairs
-
-    d = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    did = F.col("doc_id").cast("string")
-
-    def tail(letters: str, prefix: str = "u") -> F.Column:
-        return F.concat_ws(
-            " ", *[F.concat(F.lit(prefix), did, F.lit(ch)) for ch in letters]
-        )
-
-    corpus = d.select(
-        "doc_id", F.concat("text", F.lit(" "), tail("abcdefgh")).alias("text")
-    ).unionByName(
-        d.where(F.col("doc_id") % 5 == 0).select(
-            (F.col("doc_id") + 500_000).alias("doc_id"),
-            F.concat(
-                "text", F.lit(" "), tail("abcdef"), F.lit(" "), tail("ab", "v")
-            ).alias("text"),
-        )
-    )
-    pairs = tfidf_cosine_pairs(corpus)
-    return pairs.select(
-        "id_a",
-        "id_b",
-        F.round("cosine", 4).cast("float").alias("cosine"),
-    ).where(F.round("cosine", 4) >= 0.3)
-
-
-_Q69_SQL = """
-WITH corpus AS (
-  SELECT doc_id, text || ' ' ||
-         'u'||doc_id||'a u'||doc_id||'b u'||doc_id||'c u'||doc_id||'d ' ||
-         'u'||doc_id||'e u'||doc_id||'f u'||doc_id||'g u'||doc_id||'h' AS text
-  FROM documents
-  UNION ALL
-  SELECT doc_id + 500000, text || ' ' ||
-         'u'||doc_id||'a u'||doc_id||'b u'||doc_id||'c u'||doc_id||'d ' ||
-         'u'||doc_id||'e u'||doc_id||'f ' ||
-         'v'||doc_id||'a v'||doc_id||'b' AS text
-  FROM documents WHERE doc_id % 5 = 0),
-terms AS (
-  SELECT doc_id AS id, t.term
-  FROM corpus, unnest(string_split_regex(lower(text), '[^a-z0-9]+')) AS t(term)
-  WHERE length(t.term) > 1),
-tf AS (SELECT id, term, COUNT(*) AS tf FROM terms GROUP BY 1, 2),
-nd AS (SELECT CAST(COUNT(DISTINCT doc_id) AS DOUBLE) AS n_docs FROM corpus),
-dfq AS (SELECT term, COUNT(*) AS df_ FROM tf GROUP BY 1
-        HAVING COUNT(*) <= 400),
-w AS (SELECT id, tf.term, tf.tf * ln(n_docs / df_) AS w
-      FROM tf JOIN dfq USING (term) CROSS JOIN nd),
-nrm AS (SELECT id, term, w,
-               sqrt(SUM(w * w) OVER (PARTITION BY id)) AS norm
-        FROM w),
-pairs AS (
-  SELECT a.id AS id_a, b.id AS id_b,
-         ANY_VALUE(a.norm) AS na, ANY_VALUE(b.norm) AS nb,
-         SUM(a.w * b.w) AS dot
-  FROM nrm a JOIN nrm b ON a.term = b.term AND a.id < b.id
-  GROUP BY 1, 2)
-SELECT id_a, id_b,
-       CAST(ROUND(dot / (na * nb), 4) AS REAL) AS cosine
-FROM pairs
-WHERE ROUND(dot / (na * nb), 4) >= 0.3
-"""
-
-
-# ---------------------------------------------------------------------------
-# Q70 — asymmetric containment dedup (doc ⊇ excerpt):
-#       functions/dedup.shingle_containment_pairs
-# ---------------------------------------------------------------------------
-
-def q70_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Every 6th doc gets a planted EXCERPT (+700000: its first 20
-    words). Excerpt→original shingle containment is ~1.0 while Jaccard
-    is ~|excerpt|/|doc| ≈ 0.3 — the asymmetric-duplicate class the q15
-    Jaccard gate structurally cannot flag. Both containment directions
-    ride one pair aggregate; the division is exact small-int rational
-    math, identical across engines (no float-stability dance needed
-    beyond round-6 output)."""
-    from baskerville_spark.gates.dedup import shingle_containment_pairs
-
-    d = _scan_par(spark, _t(spark, sf_dir, "documents").select("doc_id", "text"))
-    corpus = d.unionByName(
-        d.where(F.col("doc_id") % 6 == 0).select(
-            (F.col("doc_id") + 700_000).alias("doc_id"),
-            F.array_join(
-                F.slice(F.split(F.col("text"), "\\s+"), 1, 20), " "
-            ).alias("text"),
-        )
-    )
-    p = shingle_containment_pairs(corpus)
-    return p.select(
-        "id_a",
-        "id_b",
-        F.round("containment_a", 6).alias("containment_a"),
-        F.round("containment_b", 6).alias("containment_b"),
-    )
-
-
-_Q70_SQL = """
-WITH corpus AS (
-  SELECT doc_id, text FROM documents
-  UNION ALL
-  SELECT doc_id + 700000,
-         array_to_string((string_split_regex(text, '\\s+'))[1:20], ' ')
-  FROM documents WHERE doc_id % 6 = 0),
-toks AS (
-  SELECT doc_id, string_split_regex(lower(text), '\\s+') AS t FROM corpus),
-idx AS (
-  SELECT doc_id, t, unnest(generate_series(1, greatest(len(t) - 2, 0))) AS i
-  FROM toks WHERE len(t) >= 3),
-sh0 AS (SELECT DISTINCT doc_id, array_to_string(t[i:i+2], ' ') AS shingle FROM idx),
-keep AS (SELECT shingle FROM sh0 GROUP BY shingle HAVING COUNT(*) <= 50),
-sh AS (SELECT sh0.doc_id, sh0.shingle FROM sh0 JOIN keep USING (shingle)),
-sizes AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY 1),
-common AS (
-  SELECT a.doc_id AS id_a, b.doc_id AS id_b, COUNT(*) AS c
-  FROM sh a JOIN sh b USING (shingle)
-  WHERE a.doc_id < b.doc_id GROUP BY 1, 2)
-SELECT id_a, id_b,
-       ROUND(c * 1.0 / sa.n, 6) AS containment_a,
-       ROUND(c * 1.0 / sb.n, 6) AS containment_b
-FROM common
-JOIN sizes sa ON sa.doc_id = id_a
-JOIN sizes sb ON sb.doc_id = id_b
-WHERE c * 1.0 / sa.n >= 0.8 OR c * 1.0 / sb.n >= 0.8
-"""
-
-
-# ---------------------------------------------------------------------------
-# Q71 — Gopher-style repetition quality metrics
-#       (functions/text.repetition_metrics)
-# ---------------------------------------------------------------------------
-
-def q71_repetition_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Within-doc repetition signals over documents plus a planted
-    pathological tail: every 8th doc is cloned (+800000) with its first
-    4 words repeated 10 times appended — driving all three metrics up in
-    a way the oracle recomputes exactly. The *_frac ratios are pure
-    array algebra (no explode); only top_2gram_frac pays an explode +
-    two map-side-combining aggregates."""
-    from baskerville_spark.gates.text import repetition_metrics
-
-    d = _scan_par(spark, _t(spark, sf_dir, "documents").select("doc_id", "text"))
-    rep = F.array_join(
-        F.flatten(
-            F.array_repeat(F.slice(F.split(F.col("text"), "\\s+"), 1, 4), 10)
-        ),
-        " ",
-    )
-    corpus = d.unionByName(
-        d.where(F.col("doc_id") % 8 == 0).select(
-            (F.col("doc_id") + 800_000).alias("doc_id"),
-            F.concat("text", F.lit(" "), rep).alias("text"),
-        )
-    )
-    m = repetition_metrics(corpus)
-    return m.select(
-        F.col("id").alias("doc_id"),
-        F.round("dup_token_frac", 6).alias("dup_token_frac"),
-        F.round("dup_2gram_frac", 6).alias("dup_2gram_frac"),
-        F.round("top_2gram_frac", 6).alias("top_2gram_frac"),
-    )
-
-
-_Q71_SQL = """
-WITH corpus AS (
-  SELECT doc_id, text FROM documents
-  UNION ALL
-  SELECT doc_id + 800000,
-         text || ' ' ||
-         array_to_string(flatten([ (string_split_regex(text, '\\s+'))[1:4]
-                                   FOR _ IN range(10) ]), ' ')
-  FROM documents WHERE doc_id % 8 = 0),
-toks AS (
-  SELECT doc_id, string_split_regex(lower(text), '\\s+') AS t FROM corpus),
-grams AS (
-  SELECT doc_id, t,
-         CASE WHEN len(t) >= 2
-              THEN [array_to_string(t[i:i+1], ' ')
-                    FOR i IN range(1, len(t))]
-              ELSE [] END AS g
-  FROM toks),
-ratios AS (
-  SELECT doc_id,
-         1.0 - len(list_distinct(t)) * 1.0 / len(t) AS dup_token_frac,
-         CASE WHEN len(g) > 0
-              THEN 1.0 - len(list_distinct(g)) * 1.0 / len(g)
-              ELSE 0.0 END AS dup_2gram_frac,
-         g
-  FROM grams),
-topg AS (
-  SELECT doc_id,
-         CASE WHEN len(g) > 0
-              THEN (SELECT MAX(c) FROM (
-                      SELECT COUNT(*) AS c FROM unnest(g) AS u(x) GROUP BY x
-                   )) * 1.0 / len(g)
-              ELSE 0.0 END AS top_2gram_frac
-  FROM ratios)
-SELECT r.doc_id,
-       ROUND(r.dup_token_frac, 6) AS dup_token_frac,
-       ROUND(r.dup_2gram_frac, 6) AS dup_2gram_frac,
-       ROUND(t.top_2gram_frac, 6) AS top_2gram_frac
-FROM ratios r JOIN topg t ON r.doc_id = t.doc_id
-"""
-
-
-# ---------------------------------------------------------------------------
-# Q72 — per-document character entropy (functions/text.char_entropy)
-# ---------------------------------------------------------------------------
-
-def q72_char_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """CCNet-family quality signal: Shannon entropy (nats) of each doc's
-    character distribution, with planted degenerate docs — every 9th doc
-    cloned (+900000) as 200 repeats of one character (entropy exactly 0)
-    — that any entropy floor filter must catch. ONE explode + ONE
-    aggregate via the ln(n) − Σc·ln(c)/n identity (no per-id window);
-    the (doc, char) key space is alphabet-bounded so the shuffle is tiny
-    at any document length."""
-    from baskerville_spark.gates.text import char_entropy
-
-    d = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    corpus = d.unionByName(
-        d.where(F.col("doc_id") % 9 == 0).select(
-            (F.col("doc_id") + 900_000).alias("doc_id"),
-            F.repeat(F.lit("a"), 200).alias("text"),
-        )
-    )
-    return char_entropy(corpus).select(
-        F.col("id").alias("doc_id"),
-        F.round("entropy", 4).cast("float").alias("entropy"),
-    )
-
-
-_Q72_SQL = """
-WITH corpus AS (
-  SELECT doc_id, text FROM documents
-  UNION ALL
-  SELECT doc_id + 900000, repeat('a', 200) FROM documents WHERE doc_id % 9 = 0),
-chars AS (
-  SELECT doc_id AS id, c.ch
-  FROM corpus, unnest(string_split(coalesce(text, ''), '')) AS c(ch)
-  WHERE c.ch <> ''),
-counts AS (SELECT id, ch, COUNT(*) AS c FROM chars GROUP BY 1, 2),
-ent AS (
-  SELECT id, ln(SUM(c)) - SUM(c * ln(c)) / SUM(c) AS entropy
-  FROM counts GROUP BY id),
-ids AS (SELECT DISTINCT doc_id AS id FROM corpus)
-SELECT ids.id AS doc_id,
-       CAST(ROUND(coalesce(ent.entropy, 0.0), 4) AS REAL) AS entropy
-FROM ids LEFT JOIN ent USING (id)
-"""
-
-
-# ---------------------------------------------------------------------------
-# Q73 — PII detection + scrubbing (functions/text.pii_scrub)
-# ---------------------------------------------------------------------------
-
-_PII_TAIL = (
-    " contact bob.smith@example.com from 192.168.1.77"
-    " call 555-123-4567 ssn 123-45-6789"
-)
-
-
-def q73_pii_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The pre-release redaction pass: every 10th doc (+1000000) gets an
-    appended PII payload (email, IPv4, US-phone, SSN shapes). Counts are
-    one regexp_count per pattern and the scrub one chained
-    regexp_replace — a single whole-stage-codegen projection, zero
-    shuffle; the oracle re-runs the identical regex family (RE2/Java
-    common subset — no backreferences, no lookaround) and md5s the
-    scrubbed text, so replacement ORDER (most-specific first: an SSN
-    must not be half-eaten by the phone pattern) is under the hash."""
-    from baskerville_spark.gates.text import pii_scrub
-
-    d = _scan_par(spark, _t(spark, sf_dir, "documents").select("doc_id", "text"))
-    corpus = d.unionByName(
-        d.where(F.col("doc_id") % 10 == 0).select(
-            (F.col("doc_id") + 1_000_000).alias("doc_id"),
-            F.concat("text", F.lit(_PII_TAIL)).alias("text"),
-        )
-    )
-    out = pii_scrub(corpus)
-    return out.select(
-        F.col("id").alias("doc_id"),
-        "email_count",
-        "ipv4_count",
-        "ssn_count",
-        "phone_count",
-        "pii_total",
-        F.md5("scrubbed").alias("scrubbed_md5"),
-    )
-
-
-_Q73_SQL = """
-WITH corpus AS (
-  SELECT doc_id, text FROM documents
-  UNION ALL
-  SELECT doc_id + 1000000,
-         text || ' contact bob.smith@example.com from 192.168.1.77' ||
-                 ' call 555-123-4567 ssn 123-45-6789'
-  FROM documents WHERE doc_id % 10 = 0),
-pat AS (
-  SELECT
-    '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\\.[A-Za-z]{2,}' AS email,
-    '\\b(?:(?:25[0-5]|2[0-4][0-9]|1[0-9]{2}|[1-9]?[0-9])\\.){3}(?:25[0-5]|2[0-4][0-9]|1[0-9]{2}|[1-9]?[0-9])\\b' AS ipv4,
-    '\\b[0-9]{3}-[0-9]{2}-[0-9]{4}\\b' AS ssn,
-    '\\b(?:\\+?1[-. ]?)?\\(?[0-9]{3}\\)?[-. ][0-9]{3}[-. ][0-9]{4}\\b' AS phone)
-SELECT doc_id,
-       CAST(len(regexp_extract_all(t, email)) AS INT) AS email_count,
-       CAST(len(regexp_extract_all(t, ipv4)) AS INT) AS ipv4_count,
-       CAST(len(regexp_extract_all(t, ssn)) AS INT) AS ssn_count,
-       CAST(len(regexp_extract_all(t, phone)) AS INT) AS phone_count,
-       CAST(len(regexp_extract_all(t, email)) + len(regexp_extract_all(t, ipv4))
-          + len(regexp_extract_all(t, ssn)) + len(regexp_extract_all(t, phone))
-          AS INT) AS pii_total,
-       md5(regexp_replace(
-             regexp_replace(
-               regexp_replace(
-                 regexp_replace(t, email, '<EMAIL>', 'g'),
-                 ipv4, '<IP>', 'g'),
-               ssn, '<SSN>', 'g'),
-             phone, '<PHONE>', 'g')) AS scrubbed_md5
-FROM (SELECT doc_id, coalesce(text, '') AS t FROM corpus), pat
-"""
-
-
 # --------------------------------------------------------------------------
 # q74/q75: metadata-consistency checks over a CLOSED-FORM clip-metadata table
 # (every column is pure mod arithmetic on the row index, so DuckDB rebuilds
@@ -2480,66 +1337,6 @@ FROM flags GROUP BY part_id
 """
 
 
-def q76_decontamination(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Benchmark decontamination (8-gram overlap): benchmark = docs with
-    doc_id%10==7, training = the rest; flag training docs sharing any
-    8-gram with the benchmark. Broadcast semi-join on the benchmark's
-    distinct shingles — the training corpus never shuffles its text."""
-    from baskerville_spark.gates.dedup import decontaminate
-
-    d = _scan_par(spark, _t(spark, sf_dir, "documents").select("doc_id", "text"))
-    bench = d.where(F.col("doc_id") % 10 == 7)
-    train = d.where(F.col("doc_id") % 10 != 7)
-    return decontaminate(train, bench)
-
-
-_Q76_SQL = """
-WITH toks AS (
-  SELECT doc_id, string_split_regex(lower(text), '\\s+') AS t FROM documents),
-idx AS (
-  SELECT doc_id, t, unnest(generate_series(1, greatest(len(t) - 7, 0))) AS i
-  FROM toks WHERE len(t) >= 8),
-sh AS (SELECT DISTINCT doc_id, array_to_string(t[i:i+7], ' ') AS shingle FROM idx),
-bench AS (SELECT DISTINCT shingle FROM sh WHERE doc_id % 10 = 7)
-SELECT s.doc_id, COUNT(*) AS n_contaminated_shingles
-FROM sh s JOIN bench USING (shingle)
-WHERE s.doc_id % 10 <> 7
-GROUP BY s.doc_id
-"""
-
-
-def q77_sequence_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Context-window packing: concatenate docs in doc_id order, cut every
-    512 tokens, report per-bin doc count / token mass / id span. The global
-    prefix sum is the two-phase distributed form (range partition -> P-row
-    block-total agg -> literal offset map -> per-block window): no
-    single-task global Window.orderBy — see functions/packing.py."""
-    from baskerville_spark.gates.packing import pack_sequences, packed_bin_summary
-
-    d = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    return packed_bin_summary(pack_sequences(d))
-
-
-_Q77_SQL = """
-WITH t AS (
-  SELECT doc_id,
-         len(string_split_regex(trim(text), '\\s+')) AS n_tokens
-  FROM documents),
-c AS (
-  SELECT doc_id, n_tokens,
-         SUM(n_tokens) OVER (ORDER BY doc_id
-                             ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-           - n_tokens AS start_offset
-  FROM t)
-SELECT CAST(start_offset // 512 AS BIGINT) AS bin_id,
-       COUNT(*) AS n_docs,
-       CAST(SUM(n_tokens) AS BIGINT) AS n_tokens,
-       MIN(doc_id) AS first_doc,
-       MAX(doc_id) AS last_doc
-FROM c GROUP BY 1
-"""
-
-
 # --------------------------------------------------------------------------
 # q78: domain-mixture rebalancing sample
 # --------------------------------------------------------------------------
@@ -2576,72 +1373,6 @@ SELECT d.doc_id, d.source
 FROM documents d JOIN thr USING (source)
 WHERE ('0x' || substr(md5(CAST(d.doc_id AS VARCHAR)), 1, 15))::BIGINT % 1000000
       < thr.thr
-"""
-
-
-# --------------------------------------------------------------------------
-# q79/q80: document chunking + vocabulary/OOV audit
-# --------------------------------------------------------------------------
-
-
-def q79_chunk_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Sliding-window chunking (100-token windows every 80 tokens): the
-    RAG / long-doc preprocessing split. Pure Column algebra (split ->
-    sequence -> posexplode -> slice), no shuffle; chunk content is under
-    the hash via md5 of the re-joined window."""
-    from baskerville_spark.gates.packing import chunk_documents
-
-    d = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    return chunk_documents(d)
-
-
-_Q79_SQL = """
-WITH t AS (
-  SELECT doc_id, string_split_regex(trim(text), '\\s+') AS toks FROM documents),
-s AS (
-  SELECT doc_id, toks, len(toks) AS n,
-         unnest(generate_series(0, greatest(len(toks) - 1, 0), 80)) AS start_tok
-  FROM t)
-SELECT doc_id,
-       CAST(start_tok // 80 AS INT) AS chunk_idx,
-       CAST(start_tok AS INT) AS start_tok,
-       CAST(least(100, n - start_tok) AS INT) AS n_tokens_chunk,
-       md5(array_to_string(toks[start_tok + 1 : start_tok + 100], ' ')) AS chunk_md5
-FROM s
-"""
-
-
-def q80_vocab_oov(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Vocabulary-coverage audit: top-500 corpus tokens by frequency
-    (deterministic tie-break), then per-document OOV rate against that
-    vocab. Count agg with map-side combine absorbs token skew; the vocab
-    is TakeOrdered'd (no global sort) and broadcast into the coverage
-    join, so the corpus tokens never shuffle by token twice."""
-    from baskerville_spark.gates.text import oov_rate, vocab_top_tokens
-
-    d = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    vocab = vocab_top_tokens(d)
-    return oov_rate(d, vocab).select(
-        F.col("id").alias("doc_id"), "n_tokens", "n_oov", "oov_ratio"
-    )
-
-
-_Q80_SQL = """
-WITH tok AS (
-  SELECT doc_id, unnest(string_split_regex(trim(lower(text)), '\\s+')) AS token
-  FROM documents),
-tok2 AS (SELECT doc_id, token FROM tok WHERE token <> ''),
-vocab AS (
-  SELECT token FROM (
-    SELECT token, COUNT(*) AS cnt FROM tok2 GROUP BY token)
-  ORDER BY cnt DESC, token ASC LIMIT 500)
-SELECT t.doc_id,
-       COUNT(*) AS n_tokens,
-       CAST(SUM(CASE WHEN v.token IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_oov,
-       ROUND(SUM(CASE WHEN v.token IS NULL THEN 1 ELSE 0 END) * 1.0
-             / COUNT(*), 6) AS oov_ratio
-FROM tok2 t LEFT JOIN vocab v USING (token)
-GROUP BY t.doc_id
 """
 
 
@@ -2891,53 +1622,6 @@ FROM idx
 
 
 # --------------------------------------------------------------------------
-# q86: batched top-k retrieval
-# --------------------------------------------------------------------------
-
-
-def q86_batched_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Batch retrieval gate: every 50th embedding is a query; exact cosine
-    top-5 per query over the disjoint corpus. Broadcast query set, one
-    map-side scoring join, per-query rank — ties broken by id so the row
-    set is deterministic; ranking happens on RAW doubles (identical
-    arithmetic both engines, proven by q14/q22), rounding only on output."""
-    from baskerville_spark.gates.similarity import cosine_topk_batched
-
-    emb = _t(spark, sf_dir, "embeddings")
-    queries = emb.where(F.col("vec_id") % 50 == 7)
-    corpus = emb.where(F.col("vec_id") % 50 != 7)
-    out = cosine_topk_batched(corpus, queries)
-    return out.select(
-        "query_id",
-        F.col("id").alias("vec_id"),
-        "rank",
-        F.round("cosine_sim", 4).alias("cosine_sim"),
-    )
-
-
-_Q86_SQL = """
-WITH q AS (
-  SELECT vec_id AS query_id, embedding AS e FROM embeddings WHERE vec_id % 50 = 7),
-c AS (
-  SELECT vec_id, embedding FROM embeddings WHERE vec_id % 50 <> 7),
-s AS (
-  SELECT q.query_id, c.vec_id,
-         list_sum(list_transform(generate_series(1, len(c.embedding)),
-                  i -> CAST(c.embedding[i] AS DOUBLE) * CAST(q.e[i] AS DOUBLE)))
-         / (sqrt(list_sum(list_transform(c.embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))
-            * sqrt(list_sum(list_transform(q.e, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))))
-           AS cos
-  FROM c, q),
-r AS (
-  SELECT query_id, vec_id, cos,
-         ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY cos DESC, vec_id ASC) AS rn
-  FROM s)
-SELECT query_id, vec_id, CAST(rn AS INT) AS rank, ROUND(cos, 4) AS cosine_sim
-FROM r WHERE rn <= 5
-"""
-
-
-# --------------------------------------------------------------------------
 # q87: stereo downmix via exact channel identities
 # --------------------------------------------------------------------------
 
@@ -3175,31 +1859,6 @@ SELECT printf('pt_%06d', i) AS clip_id,
        CAST(2 * ((i % 20) + 2) AS INT) AS period_samples,
        TRUE AS ok_period
 FROM idx
-"""
-
-
-# --------------------------------------------------------------------------
-# q93: bloom-filter pre-filtered referential semi-join over testdata
-# --------------------------------------------------------------------------
-
-
-def q93_bloom_semi(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Bloom semi-join gate: orders restricted to a deterministic customer
-    subset (c_custkey % 7 == 0) through bloom-prune -> exact verify; the
-    composition must equal DuckDB's plain IN-subquery bit-for-bit (bloom
-    false positives all removed by the verify join)."""
-    from baskerville_spark.gates.bloom import bloom_semi_join
-
-    orders = _t(spark, sf_dir, "orders")
-    dim = _t(spark, sf_dir, "customer").where(F.col("c_custkey") % 7 == 0)
-    out = bloom_semi_join(orders, dim, fact_key="o_custkey", dim_key="c_custkey")
-    return out.select("o_orderkey", "o_custkey")
-
-
-_Q93_SQL = """
-SELECT o_orderkey, o_custkey
-FROM orders
-WHERE o_custkey IN (SELECT c_custkey FROM customer WHERE c_custkey % 7 = 0)
 """
 
 
@@ -3475,65 +2134,6 @@ FROM c cur JOIN c prv ON cur.window_id = prv.window_id + 1
 """
 
 
-# --------------------------------------------------------------------------
-# q99/q100: dedup survivor selection + deterministic corpus splits
-# --------------------------------------------------------------------------
-
-
-def q99_keep_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Dedup-execution gate: every 10th document is cloned (+500000) with a
-    LONGER text (an appended tail), the corpus is clustered on a 32-char
-    prefix fingerprint, and keep_canonical must retain the highest-quality
-    copy per cluster — i.e. the CLONE beats its min-id original wherever a
-    clone exists, proving selection is quality-driven, not min-id. The
-    oracle re-derives every cluster (prefix groups) and its
-    length-then-min-id winner with a window."""
-    from baskerville_spark.gates.dedup import keep_canonical
-    from baskerville_spark.gates.graph import dedup_clusters
-
-    base = (
-        _t(spark, sf_dir, "documents")
-        .where(F.col("text").isNotNull() & (F.length("text") >= 32))
-        .select("doc_id", "text")
-    )
-    clones = base.where(F.col("doc_id") % 10 == 0).select(
-        (F.col("doc_id") + 500000).alias("doc_id"),
-        F.concat(F.col("text"), F.lit(" zzz extra quality tail")).alias("text"),
-    )
-    corpus = base.unionByName(clones)
-    membership = corpus.select(
-        F.col("doc_id").alias("id"),
-        F.xxhash64(F.substring("text", 1, 32)).alias("bucket"),
-    )
-    clusters = dedup_clusters(membership)
-    survivors, winners = keep_canonical(corpus, clusters, F.length("text"))
-    return survivors.join(
-        winners.select(F.col("keep_id").alias("doc_id"), "cluster_size"),
-        "doc_id",
-    ).select("doc_id", "cluster_size")
-
-
-_Q99_SQL = """
-WITH base AS (
-  SELECT doc_id, text FROM documents
-  WHERE text IS NOT NULL AND length(text) >= 32),
-corpus AS (
-  SELECT doc_id, text FROM base
-  UNION ALL
-  SELECT doc_id + 500000 AS doc_id, text || ' zzz extra quality tail' AS text
-  FROM base WHERE doc_id % 10 = 0),
-g AS (
-  SELECT doc_id, text, substr(text, 1, 32) AS pfx,
-         ROW_NUMBER() OVER (
-           PARTITION BY substr(text, 1, 32)
-           ORDER BY length(text) DESC, doc_id ASC) AS rk,
-         COUNT(*) OVER (PARTITION BY substr(text, 1, 32)) AS cluster_size
-  FROM corpus)
-SELECT doc_id, CAST(cluster_size AS BIGINT) AS cluster_size
-FROM g WHERE rk = 1
-"""
-
-
 def q100_corpus_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Split gate: the full (doc_id -> train/val/test) assignment is under
     the hash — deterministic md5-bucket thresholds (80/10/10), disjoint
@@ -3800,45 +2400,6 @@ SELECT printf('vd_%06d', i) AS clip_id,
        CASE WHEN g >= 64 THEN GREATEST(a, b) ELSE a + g + b END AS max_len,
        CASE WHEN g >= 64 THEN a + b ELSE a + g + b END AS voiced_total
 FROM m
-"""
-
-
-def q106_transcript_edit_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Edit-distance transcript QA: the graded form of the reference's
-    exact transcript equality (a near-miss ASR transcript scores a small
-    CER instead of a binary fail). Two deterministic corruption channels
-    over the documents table — substitutions (e→a) and a 10-char prefix
-    deletion — scored with the native JVM levenshtein (no Python) and
-    normalized to a character error rate; DuckDB's levenshtein must agree
-    on every row."""
-    # _scan_par: three O(len_a * len_b) levenshtein DPs per row — the one
-    # query in the suite where per-row CPU dwarfs everything else; on the
-    # single-file scan it all ran on one core (guide §2.5)
-    d = _scan_par(
-        spark, _t(spark, sf_dir, "documents").where(F.col("text").isNotNull())
-    )
-    sub = F.regexp_replace(F.col("text"), "e", "a")
-    cut = F.substring(F.col("text"), 11, 1_000_000)
-    ref_len = F.greatest(F.length("text"), F.lit(1))
-    return d.select(
-        "doc_id",
-        F.levenshtein(F.col("text"), sub).cast("long").alias("dist_sub"),
-        F.levenshtein(F.col("text"), cut).cast("long").alias("dist_cut"),
-        F.round(F.levenshtein(F.col("text"), sub) / ref_len, 6).alias("cer_sub"),
-        (F.levenshtein(F.col("text"), sub) <= ref_len * 0.3).cast("int").alias("pass_sub"),
-    )
-
-
-_Q106_SQL = """
-SELECT doc_id,
-       CAST(levenshtein(text, replace(text, 'e', 'a')) AS BIGINT) AS dist_sub,
-       CAST(levenshtein(text, substring(text, 11)) AS BIGINT) AS dist_cut,
-       ROUND(levenshtein(text, replace(text, 'e', 'a'))
-             * 1.0 / GREATEST(length(text), 1), 6) AS cer_sub,
-       CASE WHEN levenshtein(text, replace(text, 'e', 'a'))
-                 <= GREATEST(length(text), 1) * 0.3
-            THEN 1 ELSE 0 END AS pass_sub
-FROM documents WHERE text IS NOT NULL
 """
 
 
@@ -4247,142 +2808,6 @@ SELECT printf('mu_%06d', i) AS clip_id,
        CAST(40 AS BIGINT) AS n_samples,
        TRUE AS uniform
 FROM d
-"""
-
-
-# --------------------------------------------------------------------------
-# q114: distributed BPE merge training — the tokenizer-TRAINING step
-# (functions/bpe.py): corpus → word-frequency table once, then per round
-# one pair aggregate + one pure-Column fold rewrite, _Ckpt-truncated.
-# --------------------------------------------------------------------------
-
-
-def q114_bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """BPE gate: 12 planted two-letter words over DISJOINT alphabets with
-    strictly decreasing frequencies (word j = chr(97+2j)chr(97+2j+1)
-    repeated 100−4j times) — merges must come out in exact frequency
-    order with exact pair counts; merged words collapse to one symbol and
-    stop producing pairs, so ranks never interfere."""
-    from baskerville_spark.gates.bpe import train_bpe_merges
-
-    docs = spark.range(12).select(
-        F.col("id").alias("doc_id"),
-        F.array_join(
-            F.array_repeat(
-                F.concat(
-                    F.char(97 + F.col("id") * 2),
-                    F.char(97 + F.col("id") * 2 + 1),
-                ),
-                (100 - F.col("id").cast("int") * 4),
-            ),
-            " ",
-        ).alias("text"),
-    )
-    return train_bpe_merges(docs, n_merges=12)
-
-
-_Q114_SQL = """
-WITH idx AS (SELECT unnest(generate_series(0, 11)) AS j)
-SELECT CAST(j + 1 AS INT) AS merge_rank,
-       chr(CAST(97 + 2 * j AS INT)) AS lsym,
-       chr(CAST(97 + 2 * j + 1 AS INT)) AS rsym,
-       CAST(100 - 4 * j AS BIGINT) AS pair_count
-FROM idx
-"""
-
-
-# --------------------------------------------------------------------------
-# q115: BPE apply — tokenize with the trained merge table (train→apply
-# loop closed; the regex token_count_bpe of functions/text.py is the
-# approximation, this is the real rank-priority tokenizer).
-# --------------------------------------------------------------------------
-
-
-def q115_bpe_tokenize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Train on the q114 corpus (12 disjoint pairs, strictly ordered
-    frequencies) + one rare word 'zq' whose pair count (2) never wins a
-    round — then tokenize: trained words collapse to ONE token each
-    (n_tokens = repeat count), the untrained word stays characters
-    (2 tokens per occurrence)."""
-    from baskerville_spark.gates.bpe import apply_bpe, train_bpe_merges
-
-    docs = spark.range(12).select(
-        F.col("id").alias("doc_id"),
-        F.array_join(
-            F.array_repeat(
-                F.concat(
-                    F.char(97 + F.col("id") * 2),
-                    F.char(97 + F.col("id") * 2 + 1),
-                ),
-                (100 - F.col("id").cast("int") * 4),
-            ),
-            " ",
-        ).alias("text"),
-    ).unionByName(
-        spark.createDataFrame([(12, "zq zq")], "doc_id long, text string")
-    )
-    merges = train_bpe_merges(docs, n_merges=12)
-    toks = apply_bpe(docs, merges)
-    return toks.select(
-        "doc_id",
-        F.size("bpe_tokens").alias("n_tokens"),
-        F.element_at("bpe_tokens", 1).alias("first_token"),
-    )
-
-
-_Q115_SQL = """
-WITH idx AS (SELECT unnest(generate_series(0, 11)) AS j)
-SELECT CAST(j AS BIGINT) AS doc_id,
-       CAST(100 - 4 * j AS INT) AS n_tokens,
-       chr(CAST(97 + 2 * j AS INT)) || chr(CAST(97 + 2 * j + 1 AS INT))
-         AS first_token
-FROM idx
-UNION ALL
-SELECT 12, 4, 'z'
-"""
-
-
-# --------------------------------------------------------------------------
-# q116: C4-style cross-document line dedup (boilerplate removal) — every
-# line keeps exactly one corpus-wide occurrence, min-(doc, line) owner.
-# --------------------------------------------------------------------------
-
-
-def q116_dedup_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Line-dedup gate: 40 docs share a header and footer line around two
-    unique lines each — the owner doc (0) keeps all 4 lines, every other
-    doc loses exactly the 2 boilerplate lines, and the reassembled text
-    preserves original line order (closed form in both engines)."""
-    from baskerville_spark.gates.dedup import dedup_lines
-
-    docs = spark.range(40).select(
-        F.col("id").alias("doc_id"),
-        F.concat_ws(
-            "\n",
-            F.lit("shared header boilerplate"),
-            F.format_string("unique line %d alpha", "id"),
-            F.lit("shared footer boilerplate"),
-            F.format_string("unique line %d beta", "id"),
-        ).alias("text"),
-    )
-    return dedup_lines(docs)
-
-
-_Q116_SQL = """
-WITH idx AS (SELECT unnest(generate_series(0, 39)) AS i)
-SELECT CAST(i AS BIGINT) AS doc_id,
-       CASE WHEN i = 0 THEN
-         'shared header boilerplate' || chr(10) ||
-         printf('unique line %d alpha', i) || chr(10) ||
-         'shared footer boilerplate' || chr(10) ||
-         printf('unique line %d beta', i)
-       ELSE
-         printf('unique line %d alpha', i) || chr(10) ||
-         printf('unique line %d beta', i)
-       END AS text_out,
-       CAST(CASE WHEN i = 0 THEN 4 ELSE 2 END AS BIGINT) AS n_lines_kept,
-       CAST(CASE WHEN i = 0 THEN 0 ELSE 2 END AS BIGINT) AS n_lines_removed
-FROM idx
 """
 
 
@@ -5528,7 +3953,7 @@ _GATES = (
     (q103_compaction_plan, _Q103_SQL),
     (q104_streaming_rolling_psi, _q104_sql),
     (q105_split_on_silence, _Q105_SQL),
-    (q106_transcript_edit_distance, _Q106_SQL),
+    (text.q106_transcript_edit_distance, text.Q106_SQL),
     (q107_concat_roundtrip, _Q107_SQL),
     (q108_enrich_with_state, _Q108_SQL),
     (q109_audio_align, _Q109_SQL),
@@ -5536,9 +3961,9 @@ _GATES = (
     (q111_bandwidth, _Q111_SQL),
     (q112_gap_fill, _Q112_SQL),
     (q113_mulaw_roundtrip, _Q113_SQL),
-    (q114_bpe_merges, _Q114_SQL),
-    (q115_bpe_tokenize, _Q115_SQL),
-    (q116_dedup_lines, _Q116_SQL),
+    (bpe.q114_bpe_merges, bpe.Q114_SQL),
+    (bpe.q115_bpe_tokenize, bpe.Q115_SQL),
+    (dedup.q116_dedup_lines, dedup.Q116_SQL),
     (q117_vad_stats, _Q117_SQL),
     (validation.q118_constraint_suite, validation.Q118_SQL),
     (validation.q119_incremental_stats, validation.Q119_SQL),
@@ -5578,17 +4003,17 @@ _GATES = (
     (validation.q08_stats_profile, validation.Q08_SQL),
     (validation.q09_duplicate_custkeys, validation.Q09_SQL),
     (web.q10_incident_detection, web.Q10_SQL),
-    (q11_fingerprints, _Q11_SQL),
-    (q12_quality_features, _Q12_SQL),
-    (q13_lang_id, _langid_sql),
-    (q14_ann_topk, _Q14_SQL),
-    (q15_ngram_jaccard, _Q15_SQL),
-    (q16_exact_dups, _Q16_SQL),
+    (text.q11_fingerprints, text.Q11_SQL),
+    (text.q12_quality_features, text.Q12_SQL),
+    (text.q13_lang_id, text._langid_sql),
+    (similarity.q14_ann_topk, similarity.Q14_SQL),
+    (dedup.q15_ngram_jaccard, dedup.Q15_SQL),
+    (dedup.q16_exact_dups, dedup.Q16_SQL),
     (web.q17_pricing_summary, web.Q17_SQL),
     (web.q18_top_revenue_orders, web.Q18_SQL),
-    (q19_minhash_pairs, _Q19_SQL),
-    (q20_simhash, _q20_sql),
-    (q22_vector_pairs, _Q22_SQL),
+    (dedup.q19_minhash_pairs, dedup.Q19_SQL),
+    (dedup.q20_simhash, dedup._q20_sql),
+    (similarity.q22_vector_pairs, similarity.Q22_SQL),
     (q23_streaming_window_counts, _Q23_SQL),
     (web.q24_sessionization, web.Q24_SQL),
     (web.q25_json_props, web.Q25_SQL),
@@ -5598,17 +4023,17 @@ _GATES = (
     (q29_state_merge, _Q29_SQL),
     (web.q30_cube_counts, web.Q30_SQL),
     (web.q31_heavy_both_types, web.Q31_SQL),
-    (q32_srp_lsh_pairs, _Q32_SQL),
+    (similarity.q32_srp_lsh_pairs, similarity.Q32_SQL),
     (web.q33_first_last_touch, web.Q33_SQL),
     (web.q34_map_features, web.Q34_SQL),
-    (q35_simhash_near_dups, _q35_sql),
+    (dedup.q35_simhash_near_dups, dedup._q35_sql),
     (web.q36_session_window, web.Q36_SQL),
     (q37_geo_localize, _Q37_SQL),
-    (q38_ivf_topk, _Q38_SQL),  # exact top-k on the planted-cluster corpus
+    (similarity.q38_ivf_topk, similarity.Q38_SQL),  # exact top-k on the planted-cluster corpus
     (q39_streaming_dedup, _Q39_SQL),
     (q40_image_features, _Q40_SQL),
     (q41_video_frame_sample, _Q41_SQL),
-    (q42_dup_exemplars, _Q42_SQL),
+    (uniqueness.q42_dup_exemplars, uniqueness.Q42_SQL),
     (web.q43_first_last_agg, web.Q33_SQL),  # same semantics, single-shuffle plan
     (validation.q44_drift_verdicts, validation._q44_sql),
     (q45_streaming_kafka_shaped, _Q45_SQL),
@@ -5617,8 +4042,8 @@ _GATES = (
     (validation.q48_ref_integrity, validation.Q48_SQL),
     (q49_schema_enforce, _Q49_SQL),
     (validation.q50_pattern_violations, validation.Q50_SQL),
-    (q51_normalized_dups, _Q51_SQL),
-    (q52_heavy_hitter_tokens, _Q52_SQL),
+    (dedup.q51_normalized_dups, dedup.Q51_SQL),
+    (text.q52_heavy_hitter_tokens, text.Q52_SQL),
     (q53_standard_scale, _Q53_SQL),
     (q54_string_index, _Q54_SQL),
     (q55_iforest_outliers, _Q55_SQL),
@@ -5632,41 +4057,41 @@ _GATES = (
     (q62_feature_loop, _Q62_SQL),
     (q63_sensitive_roundtrip, _Q63_SQL),
     (q64_stateful_stream_stats, _Q64_SQL),
-    (q65_dedup_clusters, _Q65_SQL),
+    (graph.q65_dedup_clusters, graph.Q65_SQL),
     (web.q66_sliding_window_counts, web.Q66_SQL),
-    (q67_chain_clusters_bigstar, _Q67_SQL),
-    (q68_incremental_chain_clusters, _Q67_SQL),
-    (q69_tfidf_cosine_pairs, _Q69_SQL),
-    (q70_containment_pairs, _Q70_SQL),
-    (q71_repetition_metrics, _Q71_SQL),
-    (q72_char_entropy, _Q72_SQL),
-    (q73_pii_scrub, _Q73_SQL),
+    (graph.q67_chain_clusters_bigstar, graph.Q67_SQL),
+    (graph.q68_incremental_chain_clusters, graph.Q67_SQL),
+    (dedup.q69_tfidf_cosine_pairs, dedup.Q69_SQL),
+    (dedup.q70_containment_pairs, dedup.Q70_SQL),
+    (text.q71_repetition_metrics, text.Q71_SQL),
+    (text.q72_char_entropy, text.Q72_SQL),
+    (text.q73_pii_scrub, text.Q73_SQL),
     (q74_payload_bytes, _Q74_SQL),
     (q75_speaking_rate, _Q75_SQL),
-    (q76_decontamination, _Q76_SQL),
-    (q77_sequence_packing, _Q77_SQL),
+    (dedup.q76_decontamination, dedup.Q76_SQL),
+    (packing.q77_sequence_packing, packing.Q77_SQL),
     (q78_mixture_sample, _q78_sql),
-    (q79_chunk_documents, _Q79_SQL),
-    (q80_vocab_oov, _Q80_SQL),
+    (packing.q79_chunk_documents, packing.Q79_SQL),
+    (text.q80_vocab_oov, text.Q80_SQL),
     (q81_robust_outliers, _Q81_SQL),
     (q82_audio_content_dedup, _Q82_SQL),
     (q83_loudness_stats, _Q83_SQL),
     (q84_spectral_features, _Q84_SQL),
     (q85_resample, _Q85_SQL),
-    (q86_batched_topk, _Q86_SQL),
+    (similarity.q86_batched_topk, similarity.Q86_SQL),
     (q87_downmix, _Q87_SQL),
     (q88_trim_silence, _Q88_SQL),
     (q89_segment, _Q89_SQL),
     (q90_normalize, _Q90_SQL),
     (q91_overlay, _Q91_SQL),
     (q92_pitch, _Q92_SQL),
-    (q93_bloom_semi, _Q93_SQL),
+    (bloom.q93_bloom_semi, bloom.Q93_SQL),
     (q94_snapshot_diff, _Q94_SQL),
     (q95_incremental_revalidation, _q95_sql),
     (q96_rolling_psi, _q96_sql),
     (q97_rolling_ks, _q97_sql),
     (validation.q98_quarantine_routing, validation._q98_sql),
-    (q99_keep_canonical, _Q99_SQL),
+    (dedup.q99_keep_canonical, dedup.Q99_SQL),
 )
 
 

@@ -29,8 +29,10 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from baskerville_spark.gates.fixtures import _t
 
 N_HASHES = 5  # bloom bit positions per key
 M_BITS = 1 << 16  # bloom bitmap size of ``bloom_semi_join``
@@ -131,3 +133,26 @@ def bloom_semi_join(
         on=fact_key,
         how="left_semi",
     )
+
+
+# --------------------------------------------------------------------------
+# q93: bloom-filter pre-filtered referential semi-join over testdata
+# --------------------------------------------------------------------------
+
+
+def q93_bloom_semi(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Bloom semi-join gate: orders restricted to a deterministic customer
+    subset (c_custkey % 7 == 0) through bloom-prune -> exact verify; the
+    composition must equal DuckDB's plain IN-subquery bit-for-bit (bloom
+    false positives all removed by the verify join)."""
+    orders = _t(spark, sf_dir, "orders")
+    dim = _t(spark, sf_dir, "customer").where(F.col("c_custkey") % 7 == 0)
+    out = bloom_semi_join(orders, dim, fact_key="o_custkey", dim_key="c_custkey")
+    return out.select("o_orderkey", "o_custkey")
+
+
+Q93_SQL = """
+SELECT o_orderkey, o_custkey
+FROM orders
+WHERE o_custkey IN (SELECT c_custkey FROM customer WHERE c_custkey % 7 = 0)
+"""

@@ -28,7 +28,7 @@ stops when the best pair occurs only once (noise, not a merge).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from baskerville_spark.runtime.checkpoint import _Ckpt
@@ -178,3 +178,91 @@ def apply_bpe(docs: DataFrame, merges: DataFrame) -> DataFrame:
             yield pdf
 
     return docs.mapInPandas(_tok, schema=out_schema)
+
+
+# --------------------------------------------------------------------------
+# q114: distributed BPE merge training — the tokenizer-TRAINING step
+# (functions/bpe.py): corpus → word-frequency table once, then per round
+# one pair aggregate + one pure-Column fold rewrite, _Ckpt-truncated.
+# --------------------------------------------------------------------------
+
+
+def q114_bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """BPE gate: 12 planted two-letter words over DISJOINT alphabets with
+    strictly decreasing frequencies (word j = chr(97+2j)chr(97+2j+1)
+    repeated 100−4j times) — merges must come out in exact frequency
+    order with exact pair counts; merged words collapse to one symbol and
+    stop producing pairs, so ranks never interfere."""
+    docs = spark.range(12).select(
+        F.col("id").alias("doc_id"),
+        F.array_join(
+            F.array_repeat(
+                F.concat(
+                    F.char(97 + F.col("id") * 2),
+                    F.char(97 + F.col("id") * 2 + 1),
+                ),
+                (100 - F.col("id").cast("int") * 4),
+            ),
+            " ",
+        ).alias("text"),
+    )
+    return train_bpe_merges(docs, n_merges=12)
+
+
+Q114_SQL = """
+WITH idx AS (SELECT unnest(generate_series(0, 11)) AS j)
+SELECT CAST(j + 1 AS INT) AS merge_rank,
+       chr(CAST(97 + 2 * j AS INT)) AS lsym,
+       chr(CAST(97 + 2 * j + 1 AS INT)) AS rsym,
+       CAST(100 - 4 * j AS BIGINT) AS pair_count
+FROM idx
+"""
+
+
+# --------------------------------------------------------------------------
+# q115: BPE apply — tokenize with the trained merge table (train→apply
+# loop closed; the regex token_count_bpe of functions/text.py is the
+# approximation, this is the real rank-priority tokenizer).
+# --------------------------------------------------------------------------
+
+
+def q115_bpe_tokenize(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Train on the q114 corpus (12 disjoint pairs, strictly ordered
+    frequencies) + one rare word 'zq' whose pair count (2) never wins a
+    round — then tokenize: trained words collapse to ONE token each
+    (n_tokens = repeat count), the untrained word stays characters
+    (2 tokens per occurrence)."""
+    docs = spark.range(12).select(
+        F.col("id").alias("doc_id"),
+        F.array_join(
+            F.array_repeat(
+                F.concat(
+                    F.char(97 + F.col("id") * 2),
+                    F.char(97 + F.col("id") * 2 + 1),
+                ),
+                (100 - F.col("id").cast("int") * 4),
+            ),
+            " ",
+        ).alias("text"),
+    ).unionByName(
+        spark.createDataFrame([(12, "zq zq")], "doc_id long, text string")
+    )
+    merges = train_bpe_merges(docs, n_merges=12)
+    toks = apply_bpe(docs, merges)
+    return toks.select(
+        "doc_id",
+        F.size("bpe_tokens").alias("n_tokens"),
+        F.element_at("bpe_tokens", 1).alias("first_token"),
+    )
+
+
+Q115_SQL = """
+WITH idx AS (SELECT unnest(generate_series(0, 11)) AS j)
+SELECT CAST(j AS BIGINT) AS doc_id,
+       CAST(100 - 4 * j AS INT) AS n_tokens,
+       chr(CAST(97 + 2 * j AS INT)) || chr(CAST(97 + 2 * j + 1 AS INT))
+         AS first_token
+FROM idx
+UNION ALL
+SELECT 12, 4, 'z'
+"""

@@ -27,9 +27,11 @@ Scale design notes (the whole point of these over naive pairwise):
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from baskerville_spark.gates.fixtures import _scan_par, _t
+from baskerville_spark.gates.graph import dedup_clusters
 from baskerville_spark.gates.uniqueness import salted_exemplars
 
 MINHASH_NUM_HASHES = 32  # signature length
@@ -542,3 +544,479 @@ def dedup_lines(docs: DataFrame) -> DataFrame:
         .where(F.col("n_lines_kept") > 0)
         .select("doc_id", "text_out", "n_lines_kept", "n_lines_removed")
     )
+
+
+def _docs_wide(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """documents, scan-parallelized for explode/regex-heavy pipelines."""
+    return _scan_par(spark, _t(spark, sf_dir, "documents"))
+
+
+# ---------------------------------------------------------------------------
+# Q15/Q16 — dedup (functions/dedup.py)
+# ---------------------------------------------------------------------------
+
+def q15_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
+    d = _docs_wide(spark, sf_dir)
+    # max_df=20: the stop-shingle guard is ACTIVE at bench scale (sf0.1 max
+    # 3-gram df is 25) and a no-op at the sf0.01 gate (max df 7) — the
+    # exercised plan is the bounded one, not the quadratic one.
+    p = ngram_jaccard_pairs(d)
+    return p.select("id_a", "id_b", F.round("jaccard", 6).alias("jaccard"))
+
+
+Q15_SQL = """
+WITH toks AS (
+  SELECT doc_id, string_split_regex(lower(text), '\\s+') AS t FROM documents),
+idx AS (
+  SELECT doc_id, t, unnest(generate_series(1, greatest(len(t) - 2, 0))) AS i
+  FROM toks WHERE len(t) >= 3),
+sh0 AS (SELECT DISTINCT doc_id, array_to_string(t[i:i+2], ' ') AS shingle FROM idx),
+keep AS (SELECT shingle FROM sh0 GROUP BY shingle HAVING COUNT(*) <= 20),
+sh AS (SELECT sh0.doc_id, sh0.shingle FROM sh0 JOIN keep USING (shingle)),
+sizes AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY 1),
+common AS (
+  SELECT a.doc_id AS id_a, b.doc_id AS id_b, COUNT(*) AS c
+  FROM sh a JOIN sh b USING (shingle)
+  WHERE a.doc_id < b.doc_id GROUP BY 1, 2)
+SELECT id_a, id_b,
+       ROUND(c * 1.0 / (sa.n + sb.n - c), 6) AS jaccard
+FROM common
+JOIN sizes sa ON sa.doc_id = id_a
+JOIN sizes sb ON sb.doc_id = id_b
+WHERE c * 1.0 / (sa.n + sb.n - c) >= 0.8
+"""
+
+
+def q16_exact_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
+    d = _t(spark, sf_dir, "documents")
+    return exact_duplicates(d).select("text_hash", "dup_count")
+
+
+Q16_SQL = """
+SELECT md5(text) AS text_hash, COUNT(*) AS dup_count FROM documents
+GROUP BY md5(text) HAVING COUNT(*) > 1
+"""
+
+
+# ---------------------------------------------------------------------------
+# Q19-Q21, Q23 — MinHash/SimHash sketches, clip validation, streaming windows
+# ---------------------------------------------------------------------------
+
+def q19_minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """MinHash-LSH near-dup pairs, verified candidates-only. The oracle is
+    the EXACT (unguarded) Jaccard pair SQL — a green row proves the banded
+    MinHash misses no true pair at this threshold on the fixture (recall
+    1.0), while the Spark plan touches only candidate docs."""
+    d = _docs_wide(spark, sf_dir)
+    p = minhash_lsh_pairs(d)
+    return p.select("id_a", "id_b", F.round("jaccard", 6).alias("jaccard"))
+
+
+Q19_SQL = """
+WITH toks AS (
+  SELECT doc_id, string_split_regex(lower(text), '\\s+') AS t FROM documents),
+idx AS (
+  SELECT doc_id, t, unnest(generate_series(1, greatest(len(t) - 2, 0))) AS i
+  FROM toks WHERE len(t) >= 3),
+sh AS (SELECT DISTINCT doc_id, array_to_string(t[i:i+2], ' ') AS shingle FROM idx),
+sizes AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY 1),
+common AS (
+  SELECT a.doc_id AS id_a, b.doc_id AS id_b, COUNT(*) AS c
+  FROM sh a JOIN sh b USING (shingle)
+  WHERE a.doc_id < b.doc_id GROUP BY 1, 2)
+SELECT id_a, id_b,
+       ROUND(c * 1.0 / (sa.n + sb.n - c), 6) AS jaccard
+FROM common
+JOIN sizes sa ON sa.doc_id = id_a
+JOIN sizes sb ON sb.doc_id = id_b
+WHERE c * 1.0 / (sa.n + sb.n - c) >= 0.8
+"""
+
+
+def q20_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-document SimHash fingerprints (SURVEY §2.8 bit ops / LLM-dedup).
+
+    ORACLE-CHECKED since round 3: simhash's only hasher is the SQL-portable
+    60-bit md5 (dedup._token_hash), so DuckDB reproduces every bit of the
+    fingerprint — token hash = ('0x' || substr(md5(tok),1,15))::BIGINT,
+    then the same 60 conditional bit-sums."""
+    d = _docs_wide(spark, sf_dir)
+    return simhash(d).select(F.col("id").alias("doc_id"), "simhash")
+
+
+def _simhash_cte() -> str:
+    """CTEs computing the 60-bit md5 SimHash per document in DuckDB —
+    bit-exact mirror of dedup.simhash."""
+    bit_sums = ",\n         ".join(
+        f"SUM(CASE WHEN ((h >> {i}) & 1) = 1 THEN 1 ELSE -1 END) AS b{i}"
+        for i in range(60)
+    )
+    recon = " + ".join(f"(CASE WHEN b{i} > 0 THEN {1 << i} ELSE 0 END)" for i in range(60))
+    return f"""
+WITH tok AS (
+  SELECT doc_id, unnest(regexp_split_to_array(lower(text), '\\s+')) AS tok
+  FROM documents
+), h AS (
+  SELECT doc_id, ('0x' || substr(md5(tok), 1, 15))::BIGINT AS h
+  FROM tok WHERE tok <> ''
+), bits AS (
+  SELECT doc_id, {bit_sums}
+  FROM h GROUP BY doc_id
+), sim AS (
+  SELECT doc_id, CAST({recon} AS BIGINT) AS simhash FROM bits
+)"""
+
+
+def _q20_sql() -> str:
+    return _simhash_cte() + "\nSELECT doc_id, simhash FROM sim"
+
+
+def q35_simhash_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """SimHash Hamming-neighbour pairs via the 15-bit chunk pigeonhole join
+    (exercises dedup.simhash_near_dups's banded equi-join — never all-pairs).
+
+    ORACLE-CHECKED since round 3 via the md5 hasher (see q20): the oracle
+    recomputes every fingerprint and brute-forces all pairs in DuckDB, so a
+    hash match proves the banded equi-join finds EXACTLY the Hamming<=3 set
+    (pigeonhole losslessness demonstrated on real data, not just the planted
+    pytest pairs)."""
+    d = _docs_wide(spark, sf_dir)
+    return simhash_near_dups(d)
+
+
+def _q35_sql() -> str:
+    return _simhash_cte() + """
+SELECT a.doc_id AS id_a, b.doc_id AS id_b,
+       CAST(bit_count(xor(a.simhash, b.simhash)) AS INT) AS hamming
+FROM sim a JOIN sim b ON a.doc_id < b.doc_id
+WHERE bit_count(xor(a.simhash, b.simhash)) <= 3
+"""
+
+
+# ---------------------------------------------------------------------------
+# Q51/Q52 — normalization-aware near-exact dedup and heavy-hitter tokens
+#           (training-data staples beyond byte-identical dedup)
+# ---------------------------------------------------------------------------
+
+def q51_normalized_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Near-exact dedup through TEXT NORMALIZATION (lowercase, strip
+    non-alphanumerics, collapse whitespace) — the standard first rung of a
+    training-data dedup ladder above byte-identical (q16) and below
+    MinHash (q19). Fixture plants case/punctuation variants: every 7th
+    document is cloned (doc_id + 100000) as UPPER(text) + ' !!!', raw-byte
+    distinct but normalization-equal, so each planted pair MUST collapse to
+    one group. Runs through the same count-first salted
+    ``exact_duplicates`` machinery on the normalized column; ids ride out
+    as a comma-joined string (array-hashing hazard — see check_oracle)."""
+    d = _scan_par(spark, _t(spark, sf_dir, "documents").select("doc_id", "text"))
+    clones = d.where(F.col("doc_id") % 7 == 0).select(
+        (F.col("doc_id") + 100_000).alias("doc_id"),
+        F.concat(F.upper(F.col("text")), F.lit(" !!!")).alias("text"),
+    )
+    normed = d.unionByName(clones).select(
+        "doc_id",
+        F.trim(
+            F.regexp_replace(
+                F.regexp_replace(F.lower(F.col("text")), "[^a-z0-9 ]", ""),
+                " +",
+                " ",
+            )
+        ).alias("norm_text"),
+    )
+    groups = exact_duplicates(normed, text_col="norm_text", exemplar_k=8)
+    return groups.select(
+        "text_hash",
+        "dup_count",
+        F.concat_ws(",", F.transform("ids", lambda x: x.cast("string"))).alias("ids"),
+    )
+
+
+Q51_SQL = """
+WITH base AS (
+  SELECT doc_id, text FROM documents
+  UNION ALL
+  SELECT doc_id + 100000, upper(text) || ' !!!' FROM documents WHERE doc_id % 7 = 0),
+normed AS (
+  SELECT doc_id,
+         trim(regexp_replace(regexp_replace(lower(text), '[^a-z0-9 ]', '', 'g'),
+                             ' +', ' ', 'g')) AS norm_text
+  FROM base),
+grp AS (
+  -- norm_text IS NOT NULL mirrors the engine's documented rule (a NULL
+  -- text never forms a duplicate group — the equi semi-join drops it);
+  -- without it DuckDB would emit a (NULL, n) group the engine never does
+  SELECT md5(norm_text) AS text_hash, COUNT(*) AS dup_count,
+         (array_agg(doc_id ORDER BY doc_id))[1:8] AS id_list
+  FROM normed WHERE norm_text IS NOT NULL
+  GROUP BY md5(norm_text) HAVING COUNT(*) > 1)
+SELECT text_hash, dup_count, array_to_string(id_list, ',') AS ids FROM grp
+"""
+
+
+# ---------------------------------------------------------------------------
+# Q69 — TF-IDF cosine similarity pairs via an inverted term index
+#       (functions/dedup.tfidf_cosine_pairs — sparse lexical similarity,
+#       no embeddings; the max_df stop-term guard is ACTIVE: the
+#       generator's tiny shared vocabulary appears in ~every doc and is
+#       dropped wholesale, which is exactly the guard's job at scale)
+# ---------------------------------------------------------------------------
+
+def q69_tfidf_cosine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Every doc gets an 8-word doc-unique tail; every 5th doc is cloned
+    (+500000) keeping 6 of the 8 tail words and adding 2 clone-unique
+    ones. After the df > 400 stop-term guard drops the generator's
+    shared vocabulary (each word appears in ~all 600 docs — raw pairwise
+    cosine on this table reaches 0.95 BECAUSE of that vocabulary, which
+    is why the guard is load-bearing), the surviving term space is
+    doc-unique tails only: the emitted pairs are EXACTLY the planted
+    clone pairs, at a cosine mixing df=2 shared-tail weights with df=1
+    singleton weights — the oracle recomputes the full tf·ln(N/df)
+    algebra, not a count. Threshold applied to the round-4 value in both
+    engines (cross-engine float-stability rule)."""
+    d = _t(spark, sf_dir, "documents").select("doc_id", "text")
+    did = F.col("doc_id").cast("string")
+
+    def tail(letters: str, prefix: str = "u") -> F.Column:
+        return F.concat_ws(
+            " ", *[F.concat(F.lit(prefix), did, F.lit(ch)) for ch in letters]
+        )
+
+    corpus = d.select(
+        "doc_id", F.concat("text", F.lit(" "), tail("abcdefgh")).alias("text")
+    ).unionByName(
+        d.where(F.col("doc_id") % 5 == 0).select(
+            (F.col("doc_id") + 500_000).alias("doc_id"),
+            F.concat(
+                "text", F.lit(" "), tail("abcdef"), F.lit(" "), tail("ab", "v")
+            ).alias("text"),
+        )
+    )
+    pairs = tfidf_cosine_pairs(corpus)
+    return pairs.select(
+        "id_a",
+        "id_b",
+        F.round("cosine", 4).cast("float").alias("cosine"),
+    ).where(F.round("cosine", 4) >= 0.3)
+
+
+Q69_SQL = """
+WITH corpus AS (
+  SELECT doc_id, text || ' ' ||
+         'u'||doc_id||'a u'||doc_id||'b u'||doc_id||'c u'||doc_id||'d ' ||
+         'u'||doc_id||'e u'||doc_id||'f u'||doc_id||'g u'||doc_id||'h' AS text
+  FROM documents
+  UNION ALL
+  SELECT doc_id + 500000, text || ' ' ||
+         'u'||doc_id||'a u'||doc_id||'b u'||doc_id||'c u'||doc_id||'d ' ||
+         'u'||doc_id||'e u'||doc_id||'f ' ||
+         'v'||doc_id||'a v'||doc_id||'b' AS text
+  FROM documents WHERE doc_id % 5 = 0),
+terms AS (
+  SELECT doc_id AS id, t.term
+  FROM corpus, unnest(string_split_regex(lower(text), '[^a-z0-9]+')) AS t(term)
+  WHERE length(t.term) > 1),
+tf AS (SELECT id, term, COUNT(*) AS tf FROM terms GROUP BY 1, 2),
+nd AS (SELECT CAST(COUNT(DISTINCT doc_id) AS DOUBLE) AS n_docs FROM corpus),
+dfq AS (SELECT term, COUNT(*) AS df_ FROM tf GROUP BY 1
+        HAVING COUNT(*) <= 400),
+w AS (SELECT id, tf.term, tf.tf * ln(n_docs / df_) AS w
+      FROM tf JOIN dfq USING (term) CROSS JOIN nd),
+nrm AS (SELECT id, term, w,
+               sqrt(SUM(w * w) OVER (PARTITION BY id)) AS norm
+        FROM w),
+pairs AS (
+  SELECT a.id AS id_a, b.id AS id_b,
+         ANY_VALUE(a.norm) AS na, ANY_VALUE(b.norm) AS nb,
+         SUM(a.w * b.w) AS dot
+  FROM nrm a JOIN nrm b ON a.term = b.term AND a.id < b.id
+  GROUP BY 1, 2)
+SELECT id_a, id_b,
+       CAST(ROUND(dot / (na * nb), 4) AS REAL) AS cosine
+FROM pairs
+WHERE ROUND(dot / (na * nb), 4) >= 0.3
+"""
+
+
+# ---------------------------------------------------------------------------
+# Q70 — asymmetric containment dedup (doc ⊇ excerpt):
+#       functions/dedup.shingle_containment_pairs
+# ---------------------------------------------------------------------------
+
+def q70_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Every 6th doc gets a planted EXCERPT (+700000: its first 20
+    words). Excerpt→original shingle containment is ~1.0 while Jaccard
+    is ~|excerpt|/|doc| ≈ 0.3 — the asymmetric-duplicate class the q15
+    Jaccard gate structurally cannot flag. Both containment directions
+    ride one pair aggregate; the division is exact small-int rational
+    math, identical across engines (no float-stability dance needed
+    beyond round-6 output)."""
+    d = _scan_par(spark, _t(spark, sf_dir, "documents").select("doc_id", "text"))
+    corpus = d.unionByName(
+        d.where(F.col("doc_id") % 6 == 0).select(
+            (F.col("doc_id") + 700_000).alias("doc_id"),
+            F.array_join(
+                F.slice(F.split(F.col("text"), "\\s+"), 1, 20), " "
+            ).alias("text"),
+        )
+    )
+    p = shingle_containment_pairs(corpus)
+    return p.select(
+        "id_a",
+        "id_b",
+        F.round("containment_a", 6).alias("containment_a"),
+        F.round("containment_b", 6).alias("containment_b"),
+    )
+
+
+Q70_SQL = """
+WITH corpus AS (
+  SELECT doc_id, text FROM documents
+  UNION ALL
+  SELECT doc_id + 700000,
+         array_to_string((string_split_regex(text, '\\s+'))[1:20], ' ')
+  FROM documents WHERE doc_id % 6 = 0),
+toks AS (
+  SELECT doc_id, string_split_regex(lower(text), '\\s+') AS t FROM corpus),
+idx AS (
+  SELECT doc_id, t, unnest(generate_series(1, greatest(len(t) - 2, 0))) AS i
+  FROM toks WHERE len(t) >= 3),
+sh0 AS (SELECT DISTINCT doc_id, array_to_string(t[i:i+2], ' ') AS shingle FROM idx),
+keep AS (SELECT shingle FROM sh0 GROUP BY shingle HAVING COUNT(*) <= 50),
+sh AS (SELECT sh0.doc_id, sh0.shingle FROM sh0 JOIN keep USING (shingle)),
+sizes AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY 1),
+common AS (
+  SELECT a.doc_id AS id_a, b.doc_id AS id_b, COUNT(*) AS c
+  FROM sh a JOIN sh b USING (shingle)
+  WHERE a.doc_id < b.doc_id GROUP BY 1, 2)
+SELECT id_a, id_b,
+       ROUND(c * 1.0 / sa.n, 6) AS containment_a,
+       ROUND(c * 1.0 / sb.n, 6) AS containment_b
+FROM common
+JOIN sizes sa ON sa.doc_id = id_a
+JOIN sizes sb ON sb.doc_id = id_b
+WHERE c * 1.0 / sa.n >= 0.8 OR c * 1.0 / sb.n >= 0.8
+"""
+
+
+def q76_decontamination(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Benchmark decontamination (8-gram overlap): benchmark = docs with
+    doc_id%10==7, training = the rest; flag training docs sharing any
+    8-gram with the benchmark. Broadcast semi-join on the benchmark's
+    distinct shingles — the training corpus never shuffles its text."""
+    d = _scan_par(spark, _t(spark, sf_dir, "documents").select("doc_id", "text"))
+    bench = d.where(F.col("doc_id") % 10 == 7)
+    train = d.where(F.col("doc_id") % 10 != 7)
+    return decontaminate(train, bench)
+
+
+Q76_SQL = """
+WITH toks AS (
+  SELECT doc_id, string_split_regex(lower(text), '\\s+') AS t FROM documents),
+idx AS (
+  SELECT doc_id, t, unnest(generate_series(1, greatest(len(t) - 7, 0))) AS i
+  FROM toks WHERE len(t) >= 8),
+sh AS (SELECT DISTINCT doc_id, array_to_string(t[i:i+7], ' ') AS shingle FROM idx),
+bench AS (SELECT DISTINCT shingle FROM sh WHERE doc_id % 10 = 7)
+SELECT s.doc_id, COUNT(*) AS n_contaminated_shingles
+FROM sh s JOIN bench USING (shingle)
+WHERE s.doc_id % 10 <> 7
+GROUP BY s.doc_id
+"""
+
+
+# --------------------------------------------------------------------------
+# q99/q100: dedup survivor selection + deterministic corpus splits
+# --------------------------------------------------------------------------
+
+
+def q99_keep_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Dedup-execution gate: every 10th document is cloned (+500000) with a
+    LONGER text (an appended tail), the corpus is clustered on a 32-char
+    prefix fingerprint, and keep_canonical must retain the highest-quality
+    copy per cluster — i.e. the CLONE beats its min-id original wherever a
+    clone exists, proving selection is quality-driven, not min-id. The
+    oracle re-derives every cluster (prefix groups) and its
+    length-then-min-id winner with a window."""
+    base = (
+        _t(spark, sf_dir, "documents")
+        .where(F.col("text").isNotNull() & (F.length("text") >= 32))
+        .select("doc_id", "text")
+    )
+    clones = base.where(F.col("doc_id") % 10 == 0).select(
+        (F.col("doc_id") + 500000).alias("doc_id"),
+        F.concat(F.col("text"), F.lit(" zzz extra quality tail")).alias("text"),
+    )
+    corpus = base.unionByName(clones)
+    membership = corpus.select(
+        F.col("doc_id").alias("id"),
+        F.xxhash64(F.substring("text", 1, 32)).alias("bucket"),
+    )
+    clusters = dedup_clusters(membership)
+    survivors, winners = keep_canonical(corpus, clusters, F.length("text"))
+    return survivors.join(
+        winners.select(F.col("keep_id").alias("doc_id"), "cluster_size"),
+        "doc_id",
+    ).select("doc_id", "cluster_size")
+
+
+Q99_SQL = """
+WITH base AS (
+  SELECT doc_id, text FROM documents
+  WHERE text IS NOT NULL AND length(text) >= 32),
+corpus AS (
+  SELECT doc_id, text FROM base
+  UNION ALL
+  SELECT doc_id + 500000 AS doc_id, text || ' zzz extra quality tail' AS text
+  FROM base WHERE doc_id % 10 = 0),
+g AS (
+  SELECT doc_id, text, substr(text, 1, 32) AS pfx,
+         ROW_NUMBER() OVER (
+           PARTITION BY substr(text, 1, 32)
+           ORDER BY length(text) DESC, doc_id ASC) AS rk,
+         COUNT(*) OVER (PARTITION BY substr(text, 1, 32)) AS cluster_size
+  FROM corpus)
+SELECT doc_id, CAST(cluster_size AS BIGINT) AS cluster_size
+FROM g WHERE rk = 1
+"""
+
+
+# --------------------------------------------------------------------------
+# q116: C4-style cross-document line dedup (boilerplate removal) — every
+# line keeps exactly one corpus-wide occurrence, min-(doc, line) owner.
+# --------------------------------------------------------------------------
+
+
+def q116_dedup_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Line-dedup gate: 40 docs share a header and footer line around two
+    unique lines each — the owner doc (0) keeps all 4 lines, every other
+    doc loses exactly the 2 boilerplate lines, and the reassembled text
+    preserves original line order (closed form in both engines)."""
+    docs = spark.range(40).select(
+        F.col("id").alias("doc_id"),
+        F.concat_ws(
+            "\n",
+            F.lit("shared header boilerplate"),
+            F.format_string("unique line %d alpha", "id"),
+            F.lit("shared footer boilerplate"),
+            F.format_string("unique line %d beta", "id"),
+        ).alias("text"),
+    )
+    return dedup_lines(docs)
+
+
+Q116_SQL = """
+WITH idx AS (SELECT unnest(generate_series(0, 39)) AS i)
+SELECT CAST(i AS BIGINT) AS doc_id,
+       CASE WHEN i = 0 THEN
+         'shared header boilerplate' || chr(10) ||
+         printf('unique line %d alpha', i) || chr(10) ||
+         'shared footer boilerplate' || chr(10) ||
+         printf('unique line %d beta', i)
+       ELSE
+         printf('unique line %d alpha', i) || chr(10) ||
+         printf('unique line %d beta', i)
+       END AS text_out,
+       CAST(CASE WHEN i = 0 THEN 4 ELSE 2 END AS BIGINT) AS n_lines_kept,
+       CAST(CASE WHEN i = 0 THEN 0 ELSE 2 END AS BIGINT) AS n_lines_removed
+FROM idx
+"""

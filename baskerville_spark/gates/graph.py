@@ -43,9 +43,10 @@ Scale design:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from baskerville_spark.gates.fixtures import _scan_par, _t
 from baskerville_spark.runtime.checkpoint import _Ckpt
 
 
@@ -421,4 +422,256 @@ def incremental_membership(
         new_membership.select(id_col, "bucket")
         .unionByName(bridge)
         .unionByName(prior_label_membership(prior_labels, id_col=id_col))
+    )
+
+
+# ---------------------------------------------------------------------------
+# Q65 — transitive dedup clustering (connected components over a UNION of
+#       similarity relations; functions/graph.py — a from-scratch extension:
+#       the reference dedups per-key only, spark/helpers.py:54-75)
+# Q66 — sliding event-time windows (overlapping F.window; SURVEY §2.10's
+#       tumbling gate q23 generalized to slide < duration)
+# ---------------------------------------------------------------------------
+
+def q65_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Multi-relation dedup clustering: three fingerprint relations over
+    the documents table — full normalized text, first-64-normalized-chars
+    prefix, last-64 suffix — are unioned into one bucket-membership list;
+    star edges + min-label connected components (functions/graph.py) give
+    every document a cluster_id = min reachable doc, the canonical
+    survivor of keep-one-per-cluster dedup.
+
+    Fixture plants a 4-document component per every-10th doc: a case/
+    punctuation clone (+100000, joins via the FULL relation), a
+    prefix-preserving truncation with a unique tail (+300000, joins ONLY
+    via the prefix relation), and a suffix-preserving clone with a unique
+    head (+400000, ONLY the suffix relation) — the truncation and the
+    suffix clone share no relation with each other, so their membership
+    in one cluster is provable only transitively through the base doc:
+    exactly the closure the pairwise gates (q16/q19/q20/q51) cannot
+    express. The DuckDB oracle recomputes the closure with a recursive
+    CTE; prefix/suffix fingerprints are defined only for docs with >= 64
+    normalized chars (both engines filter identically)."""
+    d = _scan_par(spark, _t(spark, sf_dir, "documents").select("doc_id", "text"))
+    did = F.col("doc_id").cast("string")
+    tenth = F.col("doc_id") % 10 == 0
+    # Corpus and membership as SINGLE-branch conditional explodes instead of
+    # 4- and 3-way unions: the union form evaluated the scan + normalization
+    # 12 branch-combinations deep (each union leg is its own stage fan-out
+    # of tiny tasks, and the regex normalization ran once per leg); the
+    # explode computes each row's variants and bucket list in ONE pass —
+    # same multiset of (doc_id, text) and (doc_id, bucket) rows (the
+    # when()-guards restate each leg's filter; array_compact drops the
+    # non-matching legs), and downstream groupBys are order-insensitive.
+    variant = F.array_compact(
+        F.array(
+            F.struct(F.col("doc_id"), F.col("text")),
+            F.when(
+                tenth,
+                F.struct(
+                    (F.col("doc_id") + 100_000).alias("doc_id"),
+                    F.concat(F.upper("text"), F.lit(" !!!")).alias("text"),
+                ),
+            ),
+            F.when(
+                tenth,
+                F.struct(
+                    (F.col("doc_id") + 300_000).alias("doc_id"),
+                    F.concat(
+                        F.left("text", F.lit(120)), F.lit(" qq unique tail "), did
+                    ).alias("text"),
+                ),
+            ),
+            F.when(
+                tenth,
+                F.struct(
+                    (F.col("doc_id") + 400_000).alias("doc_id"),
+                    F.concat(
+                        F.lit("zq head "), did, F.lit(" "), F.right("text", F.lit(160))
+                    ).alias("text"),
+                ),
+            ),
+        )
+    )
+    corpus = d.select(F.explode(variant).alias("v")).select("v.doc_id", "v.text")
+    nt = F.trim(
+        F.regexp_replace(
+            F.regexp_replace(F.lower("text"), "[^a-z0-9 ]", ""), " +", " "
+        )
+    )
+    normed = corpus.select("doc_id", nt.alias("nt"))
+    ntc = F.col("nt")
+    long_enough = F.length("nt") >= 64
+    buckets = F.array_compact(
+        F.array(
+            F.when(
+                ntc.isNotNull(), F.concat(F.lit("f:"), F.md5("nt"))
+            ),
+            F.when(
+                long_enough, F.concat(F.lit("p:"), F.md5(F.left("nt", F.lit(64))))
+            ),
+            F.when(
+                long_enough, F.concat(F.lit("s:"), F.md5(F.right("nt", F.lit(64))))
+            ),
+        )
+    )
+    membership = normed.select("doc_id", F.explode(buckets).alias("bucket"))
+    # Persist the narrow (doc_id, bucket) rows: the star-edge and seed jobs
+    # inside dedup_clusters each evaluate membership once, and each
+    # evaluation replays the normalization regex over the corpus. The CC
+    # loop checkpoints its labels, so the cache can be dropped on return.
+    membership = membership.persist()
+    membership.count()
+    out = dedup_clusters(
+        membership, id_col="doc_id", vertices=corpus
+    ).select(
+        F.col("id").alias("doc_id"), "cluster_id", "cluster_size", "is_canonical"
+    )
+    membership.unpersist()
+    return out
+
+
+Q65_SQL = """
+WITH RECURSIVE
+tenth AS (SELECT doc_id, text FROM documents WHERE doc_id % 10 = 0),
+corpus AS (
+  SELECT doc_id, text FROM documents
+  UNION ALL
+  SELECT doc_id + 100000, upper(text) || ' !!!' FROM tenth
+  UNION ALL
+  SELECT doc_id + 300000,
+         left(text, 120) || ' qq unique tail ' || CAST(doc_id AS VARCHAR)
+  FROM tenth
+  UNION ALL
+  SELECT doc_id + 400000,
+         'zq head ' || CAST(doc_id AS VARCHAR) || ' ' || right(text, 160)
+  FROM tenth),
+normed AS (
+  SELECT doc_id,
+         trim(regexp_replace(regexp_replace(lower(text), '[^a-z0-9 ]', '', 'g'),
+                             ' +', ' ', 'g')) AS nt
+  FROM corpus),
+rel AS (
+  SELECT doc_id, 'f:' || md5(nt) AS h FROM normed WHERE nt IS NOT NULL
+  UNION ALL
+  SELECT doc_id, 'p:' || md5(left(nt, 64)) FROM normed WHERE length(nt) >= 64
+  UNION ALL
+  SELECT doc_id, 's:' || md5(right(nt, 64)) FROM normed WHERE length(nt) >= 64),
+star AS (SELECT doc_id, MIN(doc_id) OVER (PARTITION BY h) AS root FROM rel),
+edges AS (SELECT DISTINCT doc_id AS a, root AS b FROM star WHERE doc_id <> root),
+sym AS (SELECT a, b FROM edges UNION SELECT b, a FROM edges),
+walk(id, lbl) AS (
+  SELECT doc_id, doc_id FROM corpus
+  UNION
+  SELECT s.b, w.lbl FROM walk w JOIN sym s ON s.a = w.id),
+cc AS (SELECT id, MIN(lbl) AS cluster_id FROM walk GROUP BY id)
+SELECT id AS doc_id, cluster_id,
+       COUNT(*) OVER (PARTITION BY cluster_id) AS cluster_size,
+       (id = cluster_id) AS is_canonical
+FROM cc
+"""
+
+
+# ---------------------------------------------------------------------------
+# Q67 — adversarial-diameter dedup clustering: large-star/small-star CC
+#       (functions/graph.py connected_components_bigstar) on chain graphs
+#       whose diameter defeats per-hop label propagation
+# ---------------------------------------------------------------------------
+
+def q67_chain_clusters_bigstar(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Worst-case cluster topology for label propagation: consecutive
+    doc_ids within each 100-id block are linked pairwise (doc i shares a
+    bucket with i+1), so every component is a PATH of diameter ~99 — the
+    regime where q65's min-label algorithm needs one round per hop and
+    its max_iters guard fires. connected_components_bigstar (the
+    large-star/small-star alternation, Kiveris et al. SoCC'14) converges
+    in O(log n) rounds independent of diameter, and — because rounds
+    depend on diameter, not row count — runs the SAME ~10 rounds at sf0.01
+    and at 10^12 rows. The closed-form oracle needs no recursion: path
+    components over consecutive ids are gaps-and-islands (island =
+    doc_id - row_number within block), robust to any doc_id gaps."""
+    d = _t(spark, sf_dir, "documents").select("doc_id")
+    membership = d.where(F.col("doc_id") % 100 != 99).select(
+        "doc_id", F.col("doc_id").alias("bucket")
+    ).unionByName(
+        d.where(F.col("doc_id") % 100 != 0).select(
+            "doc_id", (F.col("doc_id") - 1).alias("bucket")
+        )
+    )
+    return dedup_clusters(
+        membership,
+        id_col="doc_id",
+        vertices=d,
+        algorithm="bigstar",
+    ).select(
+        F.col("id").alias("doc_id"), "cluster_id", "cluster_size", "is_canonical"
+    )
+
+
+Q67_SQL = """
+WITH i AS (
+  SELECT doc_id, doc_id // 100 AS g,
+         doc_id - ROW_NUMBER() OVER (PARTITION BY doc_id // 100
+                                     ORDER BY doc_id) AS isl
+  FROM documents)
+SELECT doc_id,
+       MIN(doc_id) OVER (PARTITION BY g, isl) AS cluster_id,
+       COUNT(*) OVER (PARTITION BY g, isl) AS cluster_size,
+       doc_id = MIN(doc_id) OVER (PARTITION BY g, isl) AS is_canonical
+FROM i
+"""
+
+
+# ---------------------------------------------------------------------------
+# Q68 — incremental dedup clustering protocol: batch-1 clusters + the
+#       three-term incremental_membership for batch 2 must reproduce the
+#       SAME closed-form chain clusters as a from-scratch run (q67),
+#       without re-clustering batch 1's internal edges
+# ---------------------------------------------------------------------------
+
+def q68_incremental_chain_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The incremental-reclustering protocol (functions/graph.py
+    incremental_membership) under the hash gate. The q67 chain corpus is
+    ingested in TWO batches — even doc_ids first, odd second; each doc
+    emits only ITS OWN fingerprint rows ((d, d) links-to-next and
+    (d, d-1) links-to-prev within its 100-id block), so batch 2 carries
+    NO rows for the settled even docs. Batch 1 is clustered alone
+    (even-doc pairs); batch 2 then goes through the three-term union —
+    its own rows, the prior labels folded to one bucket per old cluster,
+    and the retained index's rows semi-joined on batch-2 buckets (the
+    bridge without which every odd doc strands as a singleton) — and the
+    final clusters must hash-match the SAME gaps-and-islands oracle as
+    the from-scratch q67 run. Both legs use the large-star/small-star
+    algorithm (the final graph has diameter ~99)."""
+    d = _t(spark, sf_dir, "documents").select("doc_id")
+    # bucket as string: the prior-label leg emits "prior:<cluster>"
+    # string buckets, and the three-term union must be type-consistent
+    emit = d.where(F.col("doc_id") % 100 != 99).select(
+        "doc_id", F.col("doc_id").cast("string").alias("bucket")
+    ).unionByName(
+        d.where(F.col("doc_id") % 100 != 0).select(
+            "doc_id", (F.col("doc_id") - 1).cast("string").alias("bucket")
+        )
+    )
+    b1 = emit.where(F.col("doc_id") % 2 == 0)
+    b2 = emit.where(F.col("doc_id") % 2 == 1)
+    prior = dedup_clusters(
+        b1,
+        id_col="doc_id",
+        vertices=d.where(F.col("doc_id") % 2 == 0),
+        algorithm="bigstar",
+    ).select("id", "cluster_id")
+    inc_m = incremental_membership(
+        b2,
+        prior.withColumnRenamed("id", "doc_id"),
+        retained_index=b1,
+        id_col="doc_id",
+    )
+    return dedup_clusters(
+        inc_m,
+        id_col="doc_id",
+        vertices=d,
+        algorithm="bigstar",
+    ).select(
+        F.col("id").alias("doc_id"), "cluster_id", "cluster_size", "is_canonical"
     )

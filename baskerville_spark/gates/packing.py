@@ -28,8 +28,10 @@ Token counting is whitespace tokens of ``text`` (`F.split(trim, '\\s+')`)
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+
+from baskerville_spark.gates.fixtures import _t
 
 BIN_TOKENS = 512  # context-window length of ``pack_sequences``
 CHUNK_TOKENS = 100  # window length of ``chunk_documents``
@@ -158,3 +160,63 @@ def chunk_documents(df: DataFrame) -> DataFrame:
             F.md5(F.concat_ws(" ", chunk)).alias("chunk_md5"),
         )
     )
+
+
+def q77_sequence_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Context-window packing: concatenate docs in doc_id order, cut every
+    512 tokens, report per-bin doc count / token mass / id span. The global
+    prefix sum is the two-phase distributed form (range partition -> P-row
+    block-total agg -> literal offset map -> per-block window): no
+    single-task global Window.orderBy — see functions/packing.py."""
+    d = _t(spark, sf_dir, "documents").select("doc_id", "text")
+    return packed_bin_summary(pack_sequences(d))
+
+
+Q77_SQL = """
+WITH t AS (
+  SELECT doc_id,
+         len(string_split_regex(trim(text), '\\s+')) AS n_tokens
+  FROM documents),
+c AS (
+  SELECT doc_id, n_tokens,
+         SUM(n_tokens) OVER (ORDER BY doc_id
+                             ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
+           - n_tokens AS start_offset
+  FROM t)
+SELECT CAST(start_offset // 512 AS BIGINT) AS bin_id,
+       COUNT(*) AS n_docs,
+       CAST(SUM(n_tokens) AS BIGINT) AS n_tokens,
+       MIN(doc_id) AS first_doc,
+       MAX(doc_id) AS last_doc
+FROM c GROUP BY 1
+"""
+
+
+# --------------------------------------------------------------------------
+# q79/q80: document chunking + vocabulary/OOV audit
+# --------------------------------------------------------------------------
+
+
+def q79_chunk_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Sliding-window chunking (100-token windows every 80 tokens): the
+    RAG / long-doc preprocessing split. Pure Column algebra (split ->
+    sequence -> posexplode -> slice), no shuffle; chunk content is under
+    the hash via md5 of the re-joined window."""
+    d = _t(spark, sf_dir, "documents").select("doc_id", "text")
+    return chunk_documents(d)
+
+
+Q79_SQL = """
+WITH t AS (
+  SELECT doc_id, string_split_regex(trim(text), '\\s+') AS toks FROM documents),
+s AS (
+  SELECT doc_id, toks, len(toks) AS n,
+         unnest(generate_series(0, greatest(len(toks) - 1, 0), 80)) AS start_tok
+  FROM t)
+SELECT doc_id,
+       CAST(start_tok // 80 AS INT) AS chunk_idx,
+       CAST(start_tok AS INT) AS start_tok,
+       CAST(least(100, n - start_tok) AS INT) AS n_tokens_chunk,
+       md5(array_to_string(toks[start_tok + 1 : start_tok + 100], ' ')) AS chunk_md5
+FROM s
+"""

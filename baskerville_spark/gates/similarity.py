@@ -16,8 +16,10 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from baskerville_spark.gates.fixtures import _t
 
 TOP_K = 10  # rows ``cosine_topk`` and ``ivf_topk`` return
 BATCH_TOP_K = 5  # rows per query ``cosine_topk_batched`` returns
@@ -329,3 +331,222 @@ def cosine_topk_batched(df: DataFrame, queries: DataFrame) -> DataFrame:
         .where(F.col("rank") <= BATCH_TOP_K)
         .select("query_id", "id", "rank", F.col("cos").alias("cosine_sim"))
     )
+
+
+# ---------------------------------------------------------------------------
+# Q14/Q22 — similarity search (functions/similarity.py)
+# ---------------------------------------------------------------------------
+
+def q14_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
+    emb = _t(spark, sf_dir, "embeddings")
+    qvec = [float(x) for x in emb.where("vec_id = 0").select("embedding").first()[0]]
+    top = cosine_topk(emb, qvec)
+    return top.select(F.col("id").alias("vec_id"), F.round("cosine_sim", 4).alias("cosine_sim"))
+
+
+Q14_SQL = """
+WITH q AS (SELECT embedding AS e FROM embeddings WHERE vec_id = 0)
+SELECT b.vec_id,
+       ROUND(
+         list_sum(list_transform(generate_series(1, len(b.embedding)),
+                  i -> CAST(b.embedding[i] AS DOUBLE) * CAST(q.e[i] AS DOUBLE)))
+         / (sqrt(list_sum(list_transform(b.embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))
+            * sqrt(list_sum(list_transform(q.e, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))),
+         4) AS cosine_sim
+FROM embeddings b, q
+ORDER BY cosine_sim DESC, b.vec_id ASC
+LIMIT 10
+"""
+
+
+def q22_vector_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    # repartition: the testdata table is one parquet file -> one scan task,
+    # which would serialize the O(n^2) pair loop on a single core
+    emb = _t(spark, sf_dir, "embeddings").repartition(
+        spark.sparkContext.defaultParallelism
+    )
+    p = brute_force_pairs(emb)
+    return p.select("id_a", "id_b", F.round("cosine_sim", 4).alias("cosine_sim"))
+
+
+Q22_SQL = """
+SELECT a.vec_id AS id_a, b.vec_id AS id_b,
+       ROUND(
+         list_sum(list_transform(generate_series(1, len(a.embedding)),
+                  i -> CAST(a.embedding[i] AS DOUBLE) * CAST(b.embedding[i] AS DOUBLE)))
+         / (sqrt(list_sum(list_transform(a.embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))
+            * sqrt(list_sum(list_transform(b.embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))),
+         4) AS cosine_sim
+FROM embeddings a JOIN embeddings b ON a.vec_id < b.vec_id
+WHERE list_sum(list_transform(generate_series(1, len(a.embedding)),
+               i -> CAST(a.embedding[i] AS DOUBLE) * CAST(b.embedding[i] AS DOUBLE)))
+      / (sqrt(list_sum(list_transform(a.embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))
+         * sqrt(list_sum(list_transform(b.embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))))
+      >= 0.45
+"""
+
+
+# ---------------------------------------------------------------------------
+# Q32-Q37 — SRP-LSH ANN pairs, first/last touch, map ops, simhash Hamming
+#           join, native session windows, geo-localize pandas-UDF lookup
+# ---------------------------------------------------------------------------
+
+def _augmented_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """embeddings ∪ deterministic near-duplicate twins: every 10th vector
+    gets a twin (id + 1_000_000) with odd-index components scaled by 0.95
+    (cosine ≈ 0.9997 to its base; background pairs top out ≈ 0.66). The
+    perturbation is plain arithmetic so the DuckDB oracle reproduces it.
+    Repartitioned: the single-file testdata scan would otherwise serialize
+    signature computation on one core."""
+    emb = _t(spark, sf_dir, "embeddings").repartition(
+        spark.sparkContext.defaultParallelism
+    )
+    base = emb.select(
+        "vec_id", F.transform("embedding", lambda x: x.cast("double")).alias("embedding")
+    )
+    twins = emb.where(F.col("vec_id") % 10 == 0).select(
+        (F.col("vec_id") + 1000000).alias("vec_id"),
+        F.transform(
+            "embedding",
+            lambda x, i: F.when(i % 2 == 1, x.cast("double") * 0.95).otherwise(
+                x.cast("double")
+            ),
+        ).alias("embedding"),
+    )
+    return base.unionByName(twins)
+
+
+def q32_srp_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """All-pairs vector near-dup detection on the SCALE path: SRP/hyperplane
+    LSH buckets → candidate equi-join → exact-cosine verify. The oracle is
+    the brute-force SQL — a green row proves LSH output == exact at this
+    threshold (recall 1.0 on the fixture), making q22 the baseline it
+    claims to be."""
+    aug = _augmented_embeddings(spark, sf_dir)
+    p = hyperplane_lsh_pairs(aug)
+    return p.select("id_a", "id_b", F.round("cosine_sim", 4).alias("cosine_sim"))
+
+
+Q32_SQL = """
+WITH aug AS (
+  SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
+  FROM embeddings
+  UNION ALL
+  SELECT vec_id + 1000000,
+         list_transform(generate_series(1, len(embedding)),
+                        i -> CASE WHEN i % 2 = 0 THEN CAST(embedding[i] AS DOUBLE) * 0.95
+                                  ELSE CAST(embedding[i] AS DOUBLE) END)
+  FROM embeddings WHERE vec_id % 10 = 0),
+p AS (
+  SELECT a.vec_id AS id_a, b.vec_id AS id_b,
+         list_sum(list_transform(generate_series(1, len(a.e)), i -> a.e[i] * b.e[i]))
+         / (sqrt(list_sum(list_transform(a.e, x -> x * x)))
+            * sqrt(list_sum(list_transform(b.e, x -> x * x)))) AS c
+  FROM aug a JOIN aug b ON a.vec_id < b.vec_id)
+SELECT id_a, id_b, ROUND(c, 4) AS cosine_sim FROM p WHERE c >= 0.9
+"""
+
+
+def _clustered_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Planted-cluster fixture for the IVF gate: vector i is scaled-down
+    noise (×0.05) plus the one-hot-comb center of cluster (vec_id % 8) —
+    component j gets +1.0 when j ≡ vec_id (mod 8). Centers are ~4.0 apart
+    while the noise norm is ~0.4, so the corpus has the cluster structure
+    real embedding corpora have (the structure-free raw fixture was the
+    coarse quantizer's worst case). Plain arithmetic → the DuckDB oracle
+    reproduces the corpus exactly."""
+    emb = _t(spark, sf_dir, "embeddings").repartition(
+        spark.sparkContext.defaultParallelism
+    )
+    planted = F.transform(
+        "embedding",
+        lambda x, j: x.cast("double") * 0.05
+        + F.when(j % 8 == F.col("vec_id") % 8, F.lit(1.0)).otherwise(F.lit(0.0)),
+    )
+    return emb.select("vec_id", planted.alias("embedding"))
+
+
+def q38_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """IVF approximate nearest neighbors (the ANN scale path besides LSH):
+    deterministic Lloyd-trained coarse quantizer → Arrow-batched cluster
+    assignment → probe-limited brute force over nprobe=2 of 8 centroids
+    (≤25% of the corpus scanned; selectivity plan-asserted in
+    test_functions.test_ivf_probe_prunes_clusters). Oracle = the exact
+    top-k SQL over the same planted-cluster corpus, so a green row proves
+    recall 1.0 while the probe filter genuinely prunes — the round-2 gate
+    probed 12/16 on structure-free vectors, which proved little.
+
+    At scale the assignment is a write-once index column: the ``cluster IN
+    (probe set)`` predicate partition/cluster-prunes the scan."""
+    emb = _clustered_embeddings(spark, sf_dir)
+    # the md5-threshold sampler is independent of the vec_id%8 cluster key
+    # (the old id%sample_mod filter had to be coprime with it), and the
+    # driver-side sample is hard-capped at 256·n_centroids vectors
+    cent = train_ivf_centroids(emb)
+    qvec = [float(x) for x in emb.where("vec_id = 0").select("embedding").first()[0]]
+    top = ivf_topk(emb, qvec, cent)
+    return top.select(F.col("id").alias("vec_id"), F.round("cosine_sim", 4).alias("cosine_sim"))
+
+
+Q38_SQL = """
+WITH t AS (
+  SELECT vec_id,
+         list_transform(generate_series(1, len(embedding)),
+             j -> CAST(embedding[j] AS DOUBLE) * 0.05
+                  + CASE WHEN (j - 1) % 8 = vec_id % 8 THEN 1.0 ELSE 0.0 END) AS e
+  FROM embeddings),
+q AS (SELECT e AS qe FROM t WHERE vec_id = 0),
+scored AS (
+  SELECT vec_id,
+         list_sum(list_transform(generate_series(1, len(e)), j -> e[j] * qe[j]))
+         / (sqrt(list_sum(list_transform(e, x -> x * x)))
+            * sqrt(list_sum(list_transform(qe, x -> x * x)))) AS c
+  FROM t, q)
+SELECT vec_id, ROUND(c, 4) AS cosine_sim
+FROM scored ORDER BY c DESC, vec_id ASC LIMIT 10
+"""
+
+
+# --------------------------------------------------------------------------
+# q86: batched top-k retrieval
+# --------------------------------------------------------------------------
+
+
+def q86_batched_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Batch retrieval gate: every 50th embedding is a query; exact cosine
+    top-5 per query over the disjoint corpus. Broadcast query set, one
+    map-side scoring join, per-query rank — ties broken by id so the row
+    set is deterministic; ranking happens on RAW doubles (identical
+    arithmetic both engines, proven by q14/q22), rounding only on output."""
+    emb = _t(spark, sf_dir, "embeddings")
+    queries = emb.where(F.col("vec_id") % 50 == 7)
+    corpus = emb.where(F.col("vec_id") % 50 != 7)
+    out = cosine_topk_batched(corpus, queries)
+    return out.select(
+        "query_id",
+        F.col("id").alias("vec_id"),
+        "rank",
+        F.round("cosine_sim", 4).alias("cosine_sim"),
+    )
+
+
+Q86_SQL = """
+WITH q AS (
+  SELECT vec_id AS query_id, embedding AS e FROM embeddings WHERE vec_id % 50 = 7),
+c AS (
+  SELECT vec_id, embedding FROM embeddings WHERE vec_id % 50 <> 7),
+s AS (
+  SELECT q.query_id, c.vec_id,
+         list_sum(list_transform(generate_series(1, len(c.embedding)),
+                  i -> CAST(c.embedding[i] AS DOUBLE) * CAST(q.e[i] AS DOUBLE)))
+         / (sqrt(list_sum(list_transform(c.embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))
+            * sqrt(list_sum(list_transform(q.e, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))))
+           AS cos
+  FROM c, q),
+r AS (
+  SELECT query_id, vec_id, cos,
+         ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY cos DESC, vec_id ASC) AS rn
+  FROM s)
+SELECT query_id, vec_id, CAST(rn AS INT) AS rank, ROUND(cos, 4) AS cosine_sim
+FROM r WHERE rn <= 5
+"""

@@ -9,8 +9,10 @@ merge ≤ P/n_salt and ≤ n_salt bounded lists.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from baskerville_spark.gates.fixtures import _t
 
 
 #: Largest dup_count the cold path buffers in one collect_list; above it
@@ -148,3 +150,24 @@ def duplicate_exemplars(df: DataFrame, key: str, id_col: str) -> DataFrame:
     # plans it as a hash join (EqualNullSafe is a supported join key).
     slim = slim.join(dup_keys, F.col(key).eqNullSafe(F.col("__dk")), "left_semi")
     return salted_exemplars(slim, key, "__id", EXEMPLAR_K, EXEMPLAR_SALTS)
+
+
+def q42_dup_exemplars(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Salted two-phase bounded-exemplar aggregation (the case where
+    salting is load-bearing — list state, not counts; see
+    checks/uniqueness.duplicate_exemplars and docs/PLANS.md)."""
+    o = _t(spark, sf_dir, "orders")
+    out = duplicate_exemplars(o, key="o_custkey", id_col="o_orderkey")
+    # canonical string form: array cells hash differently across engines
+    return out.select(
+        "o_custkey",
+        "dup_count",
+        F.concat_ws(",", F.col("exemplar_ids")).alias("exemplar_ids"),
+    )
+
+
+Q42_SQL = """
+SELECT o_custkey, COUNT(*) AS dup_count,
+       array_to_string((list_sort(list(o_orderkey)))[1:5], ',') AS exemplar_ids
+FROM orders GROUP BY o_custkey HAVING COUNT(*) > 1
+"""
