@@ -17,18 +17,19 @@ from __future__ import annotations
 import uuid
 from collections.abc import Callable
 
-import numpy as np
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
-from baskerville_spark import audio as au
 from baskerville_spark.gates import (
+    audio_dedup,
+    audio_quality,
+    audio_state,
     bloom,
     bpe,
     dedup,
     fixtures,
     graph,
+    multimodal,
     packing,
     similarity,
     text,
@@ -52,7 +53,6 @@ from baskerville_spark.gates.fixtures import (
     _t,
     _verdict_grid,
 )
-from baskerville_spark.generator import PLANT_SCHEMA, planted_clip, rows_from_range
 
 
 def q23_streaming_window_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -223,94 +223,6 @@ def q39_streaming_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _Q39_SQL = """
 SELECT event_type, COUNT(DISTINCT user_id) AS n_users FROM events GROUP BY event_type
-"""
-
-
-def q40_image_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Image decode + feature extraction over binary payloads (multimodal
-    plumbing, brief §multimodal): real numpy BMP decode inside mapInPandas;
-    every 17th item is a corrupt 'jpeg' exercising the decode_ok=false
-    path. Images are synthesized in-session (binary payloads can't live in
-    the shared testdata) with closed-form features, so the DuckDB oracle
-    reproduces them arithmetically."""
-    from baskerville_spark.gates.multimodal import image_features, make_bmp
-
-    rows = []
-    for i in range(240):
-        if i % 17 == 0:
-            rows.append((f"img_{i:04d}", bytearray(b"\xff\xd8garbage"), "jpeg"))
-        else:
-            c = (i * 7) % 256
-            rows.append(
-                (f"img_{i:04d}", bytearray(make_bmp(16 + i % 16, 8 + i % 8, (c, c, c))), "bmp")
-            )
-    df = spark.createDataFrame(
-        rows, "item_id string, payload binary, fmt string"
-    ).repartition(spark.sparkContext.defaultParallelism)
-    out = image_features(df)
-    return out.select(
-        "item_id",
-        "width",
-        "height",
-        "n_channels",
-        F.round("mean_luma", 4).alias("mean_luma"),
-        "ahash",  # solid-color images: no cell exceeds the mean → 0
-        F.col("decode_ok").cast("int").alias("decode_ok"),
-    )
-
-
-_Q40_SQL = """
-WITH idx AS (SELECT unnest(generate_series(0, 239)) AS i)
-SELECT 'img_' || lpad(CAST(i AS VARCHAR), 4, '0') AS item_id,
-       CASE WHEN i % 17 = 0 THEN NULL ELSE CAST(16 + i % 16 AS INT) END AS width,
-       CASE WHEN i % 17 = 0 THEN NULL ELSE CAST(8 + i % 8 AS INT) END AS height,
-       CASE WHEN i % 17 = 0 THEN NULL ELSE 3 END AS n_channels,
-       CASE WHEN i % 17 = 0 THEN NULL ELSE CAST((i * 7) % 256 AS DOUBLE) END AS mean_luma,
-       CASE WHEN i % 17 = 0 THEN NULL ELSE 0 END AS ahash,
-       CAST(i % 17 <> 0 AS INT) AS decode_ok
-FROM idx
-"""
-
-
-def q41_video_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Video frame sampling over binary payloads (multimodal plumbing):
-    every-5th-frame sampling inside mapInPandas, narrow rows out; every
-    13th item is a corrupt 'mp4' exercising the stubbed-codec path.
-    Synthesized in-session with closed-form per-frame luma so the DuckDB
-    oracle reproduces the sampled features arithmetically."""
-    from baskerville_spark.gates.multimodal import sample_frames
-
-    w, h = 4, 4
-    rows = []
-    for i in range(60):
-        if i % 13 == 0:
-            rows.append((f"vid_{i:04d}", bytearray(b"\x00\x00mp4garbage"), "mp4"))
-            continue
-        n = 12 + i % 10
-        frames = b"".join(bytes([(i * 5 + j * 3) % 256]) * (w * h) for j in range(n))
-        payload = (
-            w.to_bytes(4, "little") + h.to_bytes(4, "little") + n.to_bytes(4, "little") + frames
-        )
-        rows.append((f"vid_{i:04d}", bytearray(payload), "rawgray_video"))
-    df = spark.createDataFrame(
-        rows, "item_id string, payload binary, fmt string"
-    ).repartition(spark.sparkContext.defaultParallelism)
-    return sample_frames(df).withColumn(
-        "decode_ok", F.col("decode_ok").cast("int")
-    )
-
-
-_Q41_SQL = """
-WITH v AS (SELECT unnest(generate_series(0, 59)) AS i),
-f AS (SELECT i, unnest(generate_series(0, 11 + i % 10)) AS j FROM v WHERE i % 13 <> 0)
-SELECT 'vid_' || lpad(CAST(i AS VARCHAR), 4, '0') AS item_id,
-       CAST(j AS INT) AS frame_idx,
-       CAST((i * 5 + j * 3) % 256 AS DOUBLE) AS mean_luma,
-       1 AS decode_ok
-FROM f WHERE j % 5 = 0
-UNION ALL
-SELECT 'vid_' || lpad(CAST(i AS VARCHAR), 4, '0'), NULL, NULL, 0
-FROM v WHERE i % 13 = 0
 """
 
 
@@ -1412,457 +1324,6 @@ WHERE abs(d.x - d.med) > 5.0 * 1.4826 * greatest(md.mad, 1e-12)
 
 
 # --------------------------------------------------------------------------
-# q82: content-based audio dedup (decode-level, cross-container)
-# --------------------------------------------------------------------------
-
-
-def q82_audio_content_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Audio content dedup across containers: every 17th canonical clip is
-    transcoded to flac under a new id ('xcopy_' prefix) and unioned in; the
-    engine must recover EXACTLY the planted (original, copy) pairs by
-    joining on md5 of the DECODED sample stream (byte-level hashing cannot
-    see through the container change). One mapInArrow decode pass per
-    payload; the pair join carries only (16-byte hash, id) rows.
-
-    ORACLE: the planted set is closed-form over the generator's mod
-    arithmetic — s%17==5 minus the dup-renamed ids (no clip_s row exists)
-    and the mp3-codec drift rows (undecodable, so no transcode copy);
-    recall 1.0 and zero false pairs are both under the hash."""
-    from baskerville_spark.gates.audio_dedup import (
-        audio_content_fingerprints,
-        content_duplicate_pairs,
-        reencode,
-    )
-    from baskerville_spark.generator import GenConfig
-
-    cfg = GenConfig(n_rows=1000, n_parts=4)
-    # session-shared generated fixture replaces generate+persist: the two
-    # plan branches re-read cheap parquet instead of re-synthesizing audio
-    clips_p, _ = _shared_clip_fixture(spark, cfg)
-    clips = spark.read.parquet(clips_p)
-    suffix = F.substring("clip_id", 6, 12).cast("int")
-    plants = clips.where(suffix % 17 == 5)
-    copies = reencode(plants, "flac").withColumn(
-        "clip_id", F.concat(F.lit("xcopy_"), F.col("clip_id"))
-    )
-    corpus = clips.unionByName(copies)
-    pairs = content_duplicate_pairs(audio_content_fingerprints(corpus))
-    out = pairs.persist()
-    out.count()
-    return out
-
-
-_Q82_SQL = """
-WITH idx AS (SELECT unnest(generate_series(0, 999)) AS s),
-fl AS (
-  SELECT s,
-    least(3, (s*4)//1000) AS part,
-    (s > 0 AND s % 199 = 17
-       AND least(3, (s*4)//1000) = least(3, ((s-1)*4)//1000)
-       AND least(3, (s*4)//1000) <> 0) AS dup_renamed,
-    (least(3, (s*4)//1000) = 3 AND s % 211 <> 31 AND s % 5 = 2) AS mp3
-  FROM idx)
-SELECT printf('clip_%012d', s) AS clip_id_a,
-       'xcopy_' || printf('clip_%012d', s) AS clip_id_b
-FROM fl
-WHERE s % 17 = 5 AND NOT dup_renamed AND NOT mp3
-"""
-
-
-# --------------------------------------------------------------------------
-# q83: audio loudness / clipping QA vs analytic closed forms
-# --------------------------------------------------------------------------
-
-
-def q83_loudness_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Loudness QA gate: 300 synthesized constant-level (DC) clips whose
-    exact peak/RMS dBFS and clipped-sample counts are closed-form
-    (level v = min(500 + (i*613)%40000, 32767): peak = rms = v, clipped
-    iff v hits full scale). The measurement path is the REAL one — encode
-    to pcm_s16le, Arrow decode, per-clip stats (functions/audio_quality) —
-    and the gate emits exact integers plus |measured − analytic| < 1e-9
-    booleans (the q46 bounded-verdict pattern); the oracle rebuilds the
-    integer columns arithmetically and pins the booleans TRUE."""
-    from baskerville_spark.gates.audio_quality import audio_loudness_stats
-
-    def plant(i):
-        amp = 500 + (i * 613) % 40000
-        v = min(amp, 32767)
-        n = 100 + (i % 7) * 50
-        return [planted_clip("dc", i, np.full(n, v, dtype="<i2"), level=v)]
-
-    clips = rows_from_range(spark, 300, plant, PLANT_SCHEMA + ", level int")
-    stats = audio_loudness_stats(clips).join(
-        clips.select("clip_id", "level"), "clip_id"
-    )
-    expected_db = F.lit(20.0) * F.log10(F.col("level") / F.lit(32768.0))
-    return stats.select(
-        "clip_id",
-        "n_samples",
-        "n_clipped",
-        (F.abs(F.col("peak_dbfs") - expected_db) < 1e-9).alias("ok_peak"),
-        (F.abs(F.col("rms_dbfs") - expected_db) < 1e-9).alias("ok_rms"),
-    )
-
-
-_Q83_SQL = """
-WITH idx AS (SELECT unnest(generate_series(0, 299)) AS i)
-SELECT printf('dc_%06d', i) AS clip_id,
-       CAST(100 + (i % 7) * 50 AS BIGINT) AS n_samples,
-       CAST(CASE WHEN 500 + (i * 613) % 40000 >= 32767
-                 THEN 100 + (i % 7) * 50 ELSE 0 END AS BIGINT) AS n_clipped,
-       TRUE AS ok_peak,
-       TRUE AS ok_rms
-FROM idx
-"""
-
-
-# --------------------------------------------------------------------------
-# q84: spectral features vs exact-bin sines
-# --------------------------------------------------------------------------
-
-
-def q84_spectral_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Spectral-feature gate: 200 pure sines at exact FFT-bin frequencies
-    (f = k · sr/n_fft with an integer number of periods per window, so the
-    DFT is leakage-free and ALL energy lands in bin k). The measurement
-    path is real (pcm encode → Arrow decode → rFFT); the gate pins the
-    integer dominant_bin to its closed form and bounds the centroid
-    (|centroid − k| < 1e-6 — leakage-free means numerically-zero mass
-    elsewhere). Oracle rebuilds the integers arithmetically."""
-    from baskerville_spark.gates.audio_quality import (
-        SPECTRAL_N_FFT,
-        audio_spectral_features,
-    )
-
-    n_fft = SPECTRAL_N_FFT  # the tones sit on the bins of this window
-
-    def plant(i):
-        k = (i % 40) + 1                      # target bin 1..40
-        n = n_fft + (i % 3) * 100             # >= one full window
-        t = np.arange(n)
-        pcm = (10000 * np.sin(2 * np.pi * k * t / n_fft)).astype("<i2")
-        return [planted_clip("sine", i, pcm, bin_k=k)]
-
-    clips = rows_from_range(spark, 200, plant, PLANT_SCHEMA + ", bin_k int")
-    feats = audio_spectral_features(clips).join(
-        clips.select("clip_id", "bin_k"), "clip_id"
-    )
-    return feats.select(
-        "clip_id",
-        "n_samples",
-        "dominant_bin",
-        (F.abs(F.col("spectral_centroid") - F.col("bin_k")) < 0.5).alias(
-            "ok_centroid"
-        ),
-    )
-
-
-_Q84_SQL = """
-WITH idx AS (SELECT unnest(generate_series(0, 199)) AS i)
-SELECT printf('sine_%06d', i) AS clip_id,
-       CAST(256 + (i % 3) * 100 AS BIGINT) AS n_samples,
-       CAST((i % 40) + 1 AS INT) AS dominant_bin,
-       TRUE AS ok_centroid
-FROM idx
-"""
-
-
-# --------------------------------------------------------------------------
-# q85: resample correctness via exact decimation
-# --------------------------------------------------------------------------
-
-
-def q85_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Resampling gate: the q84 exact-bin sines (k cycles per 256 samples
-    at 16 kHz) resampled to 8 kHz. An integer downsample ratio makes the
-    linear-interp grid land exactly on original samples, so the result is
-    pure decimation: output length = n//2 (closed form) and the tone is
-    now 2k cycles per 256-sample window — dominant_bin doubles, an integer
-    the oracle rebuilds arithmetically. Pipeline under test: decode →
-    interp → re-encode → decode → rFFT, all Arrow passes."""
-    from baskerville_spark.gates.audio_quality import (
-        SPECTRAL_N_FFT,
-        audio_resample,
-        audio_spectral_features,
-    )
-
-    n_fft = SPECTRAL_N_FFT  # the tones sit on the bins of this window
-
-    def plant(i):
-        k = (i % 20) + 1                      # keep 2k well under Nyquist
-        n = n_fft * 2 + (i % 3) * 100
-        t = np.arange(n)
-        pcm = (10000 * np.sin(2 * np.pi * k * t / n_fft)).astype("<i2")
-        return [planted_clip("rs", i, pcm, sr_hz=16000, bin_k=k)]
-
-    clips = rows_from_range(
-        spark, 150, plant, PLANT_SCHEMA + ", sr_hz int, bin_k int"
-    )
-    down = audio_resample(clips, target_sr=8000)
-    feats = audio_spectral_features(down).join(
-        clips.select("clip_id", "bin_k"), "clip_id"
-    )
-    return feats.select(
-        "clip_id",
-        "n_samples",
-        "dominant_bin",
-        (F.col("dominant_bin") == F.lit(2) * F.col("bin_k")).alias("ok_doubled"),
-    )
-
-
-_Q85_SQL = """
-WITH idx AS (SELECT unnest(generate_series(0, 149)) AS i)
-SELECT printf('rs_%06d', i) AS clip_id,
-       CAST((512 + (i % 3) * 100) // 2 AS BIGINT) AS n_samples,
-       CAST(2 * ((i % 20) + 1) AS INT) AS dominant_bin,
-       TRUE AS ok_doubled
-FROM idx
-"""
-
-
-# --------------------------------------------------------------------------
-# q87: stereo downmix via exact channel identities
-# --------------------------------------------------------------------------
-
-
-def q87_downmix(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Downmix gate: interleaved stereo masters where either L == R (mean
-    is bit-identical to L) or R == 0 (mean = rint(L/2) — same tone, half
-    amplitude). Both closed forms keep the tone's FFT bin: the gate pins
-    frame counts (total//2, minus an odd-tail truncation case) and the
-    dominant bin through the REAL decode → deinterleave → mean → encode →
-    decode → rFFT pipeline."""
-    from baskerville_spark.gates.audio_quality import (
-        SPECTRAL_N_FFT,
-        audio_downmix,
-        audio_spectral_features,
-    )
-
-    n_fft = SPECTRAL_N_FFT  # the tones sit on the bins of this window
-
-    def plant(i):
-        k = (i % 30) + 1
-        frames = n_fft + (i % 3) * 100
-        t = np.arange(frames)
-        left = (10000 * np.sin(2 * np.pi * k * t / n_fft)).astype("<i2")
-        right = left if i % 2 == 0 else np.zeros(frames, dtype="<i2")
-        stereo = np.empty(frames * 2, dtype="<i2")
-        stereo[0::2] = left
-        stereo[1::2] = right
-        if i % 11 == 3:
-            stereo = np.append(stereo, np.int16(7))  # odd tail: one orphan sample
-        return [planted_clip("st", i, stereo, bin_k=k)]
-
-    clips = rows_from_range(spark, 150, plant, PLANT_SCHEMA + ", bin_k int")
-    mono = audio_downmix(clips)
-    feats = audio_spectral_features(mono).join(
-        clips.select("clip_id", "bin_k"), "clip_id"
-    )
-    return feats.select(
-        "clip_id",
-        "n_samples",
-        "dominant_bin",
-        (F.col("dominant_bin") == F.col("bin_k")).alias("ok_bin"),
-    )
-
-
-_Q87_SQL = """
-WITH idx AS (SELECT unnest(generate_series(0, 149)) AS i)
-SELECT printf('st_%06d', i) AS clip_id,
-       CAST(256 + (i % 3) * 100 AS BIGINT) AS n_samples,
-       CAST((i % 30) + 1 AS INT) AS dominant_bin,
-       TRUE AS ok_bin
-FROM idx
-"""
-
-
-# --------------------------------------------------------------------------
-# q88/q89: silence trim + fixed-window segmentation, closed-form plants
-# --------------------------------------------------------------------------
-
-
-def _q88_q89_clips(spark: SparkSession):
-    """150 pcm clips with EXACT closed-form structure: lead = i%40 zero
-    samples, body = (i%50)+1 samples of constant 5000, tail = i%25 zeros."""
-
-    def plant(i):
-        lead, body, tail = i % 40, (i % 50) + 1, i % 25
-        pcm = np.concatenate(
-            [
-                np.zeros(lead, dtype="<i2"),
-                np.full(body, 5000, dtype="<i2"),
-                np.zeros(tail, dtype="<i2"),
-            ]
-        )
-        return [planted_clip("tr", i, pcm)]
-
-    return rows_from_range(spark, 150, plant, PLANT_SCHEMA)
-
-
-def q88_trim_silence(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Endpoint silence trim gate: planted (lead zeros | constant body |
-    tail zeros) clips — the trimmed length must equal the body length
-    EXACTLY, a pure integer the oracle rebuilds from the same mods. Runs
-    the real decode → trim → encode → decode pipeline."""
-    from baskerville_spark.gates.audio_quality import audio_trim_silence
-
-    trimmed = audio_trim_silence(_q88_q89_clips(spark))
-    return au.decode_pass(
-        trimmed.select("clip_id", "bytes", "codec"),
-        T.StructType.fromDDL("clip_id string, trimmed_samples long"),
-        lambda pcm: (len(pcm),),
-    )
-
-
-_Q88_SQL = """
-WITH idx AS (SELECT unnest(generate_series(0, 149)) AS i)
-SELECT printf('tr_%06d', i) AS clip_id,
-       CAST((i % 50) + 1 AS BIGINT) AS trimmed_samples
-FROM idx
-"""
-
-
-def q89_segment(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Fixed-window segmentation gate: every clip (n = lead+body+tail,
-    closed form) split into 32-sample windows → per-clip segment count =
-    ceil(n/32) and last-segment length = n mod 32 (or 32), both integers
-    the oracle rebuilds arithmetically."""
-    from baskerville_spark.gates.audio_quality import audio_segment
-
-    segs = audio_segment(_q88_q89_clips(spark), segment_samples=32)
-    return segs.groupBy("clip_id").agg(
-        F.count(F.lit(1)).cast("long").alias("n_segments"),
-        F.max(F.col("seg_idx")).cast("int").alias("max_idx"),
-        F.min("n_samples").cast("long").alias("min_seg_len"),
-        F.sum("n_samples").cast("long").alias("total_samples"),
-    )
-
-
-_Q89_SQL = """
-WITH idx AS (SELECT unnest(generate_series(0, 149)) AS i),
-m AS (
-  SELECT i, CAST(i % 40 + (i % 50) + 1 + i % 25 AS BIGINT) AS n FROM idx)
-SELECT printf('tr_%06d', i) AS clip_id,
-       (n + 31) // 32 AS n_segments,
-       CAST((n - 1) // 32 AS INT) AS max_idx,
-       CASE WHEN n % 32 = 0 THEN 32 ELSE n % 32 END AS min_seg_len,
-       n AS total_samples
-FROM m
-"""
-
-
-# --------------------------------------------------------------------------
-# q90/q91/q92: gain normalization, overlay mixing, pitch detection —
-# closed-form PCM plants through the real decode->transform->encode passes
-# --------------------------------------------------------------------------
-
-
-def _len_peak(df: DataFrame) -> DataFrame:
-    """(clip_id, n_samples, peak |sample|) of every clip in ``df``."""
-    return au.decode_pass(
-        df.select("clip_id", "bytes", "codec"),
-        T.StructType.fromDDL("clip_id string, n_samples long, peak long"),
-        lambda pcm: (len(pcm), int(abs(pcm.astype("int32")).max())),
-    )
-
-
-def q90_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Peak-normalization gate: constant-amplitude plants (A_i closed-form,
-    one-in-13 silent and therefore dropped) through the real decode ->
-    gain -> round -> encode pass, alternating lossless codecs. The
-    normalized peak must equal the target EXACTLY (integer), and lengths
-    must survive unchanged — both rebuilt arithmetically by the oracle."""
-    from baskerville_spark.gates.audio_quality import audio_normalize
-
-    def plant(i):
-        amp = 0 if i % 13 == 5 else (i % 317) * 197 + 123
-        n = (i % 50) + 5
-        codec = "pcm_s16le" if i % 2 == 0 else "flac"
-        return [planted_clip("nm", i, np.full(n, amp, dtype="<i2"), codec)]
-
-    clips = rows_from_range(spark, 150, plant, PLANT_SCHEMA)
-    return _len_peak(audio_normalize(clips))
-
-
-_Q90_SQL = """
-WITH idx AS (SELECT unnest(generate_series(0, 149)) AS i)
-SELECT printf('nm_%06d', i) AS clip_id,
-       CAST((i % 50) + 5 AS BIGINT) AS n_samples,
-       CAST(20000 AS BIGINT) AS peak
-FROM idx
-WHERE i % 13 <> 5
-"""
-
-
-def q91_overlay(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Overlay-mix gate: constant-amplitude base (A_i) + overlay (B_i)
-    plants with different lengths, one-in-5 overlays missing (inner-join
-    drop). Saturating int16 addition gives peak = LEAST(A+B, 32767) and
-    length = LEAST(n_a, n_b) — pure integers the oracle rebuilds. Runs the
-    real join -> decode both -> mix -> encode pipeline."""
-    from baskerville_spark.gates.audio_quality import audio_overlay
-
-    def base(i):
-        pcm = np.full((i % 40) + 10, 25000 + (i % 8) * 1000, dtype="<i2")
-        return [planted_clip("ov", i, pcm)]
-
-    def over(i):
-        if i % 5 == 2:
-            return []  # missing overlay: the inner join drops the clip
-        pcm = np.full((i % 33) + 5, (i % 10) * 1000 + 500, dtype="<i2")
-        return [planted_clip("ov", i, pcm)]
-
-    mixed = audio_overlay(
-        rows_from_range(spark, 150, base, PLANT_SCHEMA),
-        rows_from_range(spark, 150, over, PLANT_SCHEMA),
-    )
-    return _len_peak(mixed)
-
-
-_Q91_SQL = """
-WITH idx AS (SELECT unnest(generate_series(0, 149)) AS i)
-SELECT printf('ov_%06d', i) AS clip_id,
-       CAST(LEAST((i % 40) + 10, (i % 33) + 5) AS BIGINT) AS n_samples,
-       CAST(LEAST(25000 + (i % 8) * 1000 + (i % 10) * 1000 + 500, 32767)
-            AS BIGINT) AS peak
-FROM idx
-WHERE i % 5 <> 2
-"""
-
-
-def q92_pitch(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Pitch-detection gate: 512-sample square waves with planted even
-    periods p in [4, 42] — the exact-int64 autocorrelation argmax must
-    recover p itself (not a harmonic: ties break to the smallest lag, and
-    (W-p) > (W-2p) separates the fundamental from its multiples)."""
-    from baskerville_spark.gates.audio_quality import audio_pitch_period
-
-    def plant(i):
-        p = 2 * ((i % 20) + 2)
-        t = np.arange(512)
-        pcm = np.where((t % p) < p // 2, 8000, -8000).astype("<i2")
-        return [planted_clip("pt", i, pcm, planted_p=p)]
-
-    clips = rows_from_range(spark, 150, plant, PLANT_SCHEMA + ", planted_p int")
-    periods = audio_pitch_period(clips)
-    return periods.join(clips.select("clip_id", "planted_p"), "clip_id").select(
-        "clip_id",
-        "period_samples",
-        (F.col("period_samples") == F.col("planted_p")).alias("ok_period"),
-    )
-
-
-_Q92_SQL = """
-WITH idx AS (SELECT unnest(generate_series(0, 149)) AS i)
-SELECT printf('pt_%06d', i) AS clip_id,
-       CAST(2 * ((i % 20) + 2) AS INT) AS period_samples,
-       TRUE AS ok_period
-FROM idx
-"""
-
-
-# --------------------------------------------------------------------------
 # q94: snapshot content diff — which partitions changed between snapshots
 # --------------------------------------------------------------------------
 
@@ -2352,106 +1813,6 @@ def _q104_sql() -> str:
 
 
 # --------------------------------------------------------------------------
-# q105/q106: interior silence splitting + edit-distance transcript QA
-# --------------------------------------------------------------------------
-
-
-def q105_split_on_silence(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """VAD-split gate: planted (lead | tone a | gap g | tone b | tail)
-    clips — when g >= min_gap (64) the clip must split into exactly the
-    two tones with exact lengths; when g < 64 the interior pause stays
-    inside one segment of length a+g+b. Pure integers from the plant mods,
-    through the real decode → split → encode pipeline."""
-    from baskerville_spark.gates.audio_quality import audio_split_on_silence
-
-    def plant(i):
-        lead, a, g, b, tail = (
-            i % 30, (i % 40) + 5, (i % 90) + 20, (i % 25) + 3, i % 50,
-        )
-        pcm = np.concatenate([
-            np.zeros(lead, dtype="<i2"),
-            np.full(a, 5000, dtype="<i2"),
-            np.zeros(g, dtype="<i2"),
-            np.full(b, 5000, dtype="<i2"),
-            np.zeros(tail, dtype="<i2"),
-        ])
-        return [planted_clip("vd", i, pcm)]
-
-    clips = rows_from_range(spark, 150, plant, PLANT_SCHEMA)
-    segs = audio_split_on_silence(clips)
-    return segs.groupBy("clip_id").agg(
-        F.count(F.lit(1)).cast("long").alias("n_segments"),
-        F.min("n_samples").cast("long").alias("min_len"),
-        F.max("n_samples").cast("long").alias("max_len"),
-        F.sum("n_samples").cast("long").alias("voiced_total"),
-    )
-
-
-_Q105_SQL = """
-WITH idx AS (SELECT unnest(generate_series(0, 149)) AS i),
-m AS (
-  SELECT i, CAST((i % 40) + 5 AS BIGINT) AS a,
-         CAST((i % 90) + 20 AS BIGINT) AS g,
-         CAST((i % 25) + 3 AS BIGINT) AS b
-  FROM idx)
-SELECT printf('vd_%06d', i) AS clip_id,
-       CASE WHEN g >= 64 THEN 2 ELSE 1 END AS n_segments,
-       CASE WHEN g >= 64 THEN LEAST(a, b) ELSE a + g + b END AS min_len,
-       CASE WHEN g >= 64 THEN GREATEST(a, b) ELSE a + g + b END AS max_len,
-       CASE WHEN g >= 64 THEN a + b ELSE a + g + b END AS voiced_total
-FROM m
-"""
-
-
-# --------------------------------------------------------------------------
-# q107: segment -> reassemble round trip (grouped payload shuffle)
-# --------------------------------------------------------------------------
-
-
-def q107_concat_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Reassembly gate: the q88 closed-form clips are segmented into
-    32-sample windows, shuffled apart, and reassembled via the grouped
-    applyInPandas concat — the round trip must be LOSSLESS: reassembled
-    length equals the closed-form original length, and the decoded content
-    hash equals the original's (compared clip-by-clip through a join of
-    the two fingerprint passes; `content_ok` must be all-true under the
-    hash gate, lengths rebuilt arithmetically by the oracle)."""
-    from baskerville_spark.gates.audio_dedup import audio_content_fingerprints
-    from baskerville_spark.gates.audio_quality import (
-        audio_concat_segments,
-        audio_segment,
-    )
-
-    clips = _q88_q89_clips(spark)
-    rebuilt = audio_concat_segments(audio_segment(clips, segment_samples=32))
-    fp_orig = audio_content_fingerprints(clips).select(
-        "clip_id", F.col("content_md5").alias("md5_orig")
-    )
-    fp_re = audio_content_fingerprints(
-        rebuilt.withColumn("part_id", F.lit(0))
-    ).select("clip_id", F.col("content_md5").alias("md5_re"))
-    return (
-        rebuilt.select("clip_id", "n_samples")
-        .join(fp_orig, "clip_id")
-        .join(fp_re, "clip_id")
-        .select(
-            "clip_id",
-            "n_samples",
-            (F.col("md5_orig") == F.col("md5_re")).alias("content_ok"),
-        )
-    )
-
-
-_Q107_SQL = """
-WITH idx AS (SELECT unnest(generate_series(0, 149)) AS i)
-SELECT printf('tr_%06d', i) AS clip_id,
-       CAST(i % 40 + (i % 50) + 1 + i % 25 AS BIGINT) AS n_samples,
-       TRUE AS content_ok
-FROM idx
-"""
-
-
-# --------------------------------------------------------------------------
 # q108: enrich-with-state left-outer + per-column coalesce (the last §2.3
 # join family that was pytest-only — VERDICT r04 item #5)
 # --------------------------------------------------------------------------
@@ -2515,67 +1876,6 @@ SELECT b.user_id,
        CAST(b.n_events + COALESCE(s.n_events, 0) AS BIGINT) AS total_events,
        ROUND(b.sum_value + COALESCE(s.sum_value, 0.0), 6) AS total_value
 FROM batch b LEFT JOIN stale s USING (user_id)
-"""
-
-
-# --------------------------------------------------------------------------
-# q109: offset-invariant audio alignment — recover WHERE a base clip starts
-# inside a delayed/padded twin (the dup variant content_md5 structurally
-# misses: k prepended silence samples change every byte). Coarse int64
-# envelope cross-correlation + exact-dot refinement, candidates-only.
-# --------------------------------------------------------------------------
-
-
-def q109_audio_align(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Alignment gate: constant-amplitude bases (A_i, m_i samples) and
-    planted twins = k_i zero samples ⊕ content. Three twin regimes under
-    one gate: (a) exact delay copies → offset k_i, ratio exactly 1.0,
-    every 3rd stored as flac (per-side codec decode); (b) rescaled copies
-    (amp A_i+1000) → offset k_i, ratio (A_i+1000)/A_i — int64-exact dot
-    algebra to the final IEEE division, bit-equal in both engines;
-    (c) truncated twins (shorter than base: no valid placement) → dropped.
-    k_i is a frame multiple except the i%5==2 stratum (k=100+i%3), which
-    forces the ±1-frame exact-dot refinement off the coarse grid."""
-    from baskerville_spark.gates.audio_dedup import audio_align_offsets
-
-    def plant(i):
-        amp = 4000 + (i % 8) * 500
-        m = 240 + (i % 5) * 48
-        k = 100 + (i % 3) if i % 5 == 2 else 64 * ((i % 7) + 1)
-        base = np.full(m, amp, dtype="<i2")
-        r = i % 5
-        if r == 1:  # truncated: shorter than base → dropped
-            twin = np.full(m - 50, amp, dtype="<i2")
-        elif r == 3:  # rescaled delay copy
-            twin = np.concatenate(
-                [np.zeros(k, dtype="<i2"),
-                 np.full(m, amp + 1000, dtype="<i2")]
-            )
-        else:  # exact delay copy
-            twin = np.concatenate([np.zeros(k, dtype="<i2"), base])
-        codec = "flac" if (r in (0, 4) and i % 3 == 0) else "pcm_s16le"
-        return [planted_clip("al", i, base), planted_clip("tw", i, twin, codec)]
-
-    clips = rows_from_range(spark, 150, plant, PLANT_SCHEMA)
-    cands = spark.range(150).select(
-        F.format_string("al_%06d", "id").alias("base_id"),
-        F.format_string("tw_%06d", "id").alias("twin_id"),
-    )
-    return audio_align_offsets(clips, cands)
-
-
-_Q109_SQL = """
-WITH idx AS (SELECT unnest(generate_series(0, 149)) AS i)
-SELECT printf('al_%06d', i) AS base_id,
-       printf('tw_%06d', i) AS twin_id,
-       CAST(CASE WHEN i % 5 = 2 THEN 100 + (i % 3)
-                 ELSE 64 * ((i % 7) + 1) END AS BIGINT) AS offset_samples,
-       CASE WHEN i % 5 = 3
-            THEN CAST(4000 + (i % 8) * 500 + 1000 AS DOUBLE)
-                 / CAST(4000 + (i % 8) * 500 AS DOUBLE)
-            ELSE 1.0 END AS match_ratio
-FROM idx
-WHERE i % 5 <> 1
 """
 
 
@@ -2644,61 +1944,6 @@ WHERE event_id % 20 = 0
 
 
 # --------------------------------------------------------------------------
-# q111: spectral-rolloff band-limit QA — WHERE the energy stops, the
-# upsampled/lowpassed-junk screen q84's dominant-bin cannot express.
-# --------------------------------------------------------------------------
-
-
-def q111_bandwidth(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Band-limit gate over exact-bin sine plants (256-sample clips,
-    n_fft=256 — bin energies are closed-form, orthogonal bins don't leak):
-    (a) low-band signal (bin 5+i%4, amp 8000) + a 100× weaker top-band
-    component (bin 100, amp 80, 1e-4 of the energy) → rolloff must IGNORE
-    the trace hf and read the low bin; (b) two EQUAL components (bins
-    5+i%4 and 90+i%5) → 50% each, so the 0.99 threshold lands on the HIGH
-    bin; (c) high-band only (bin 80+i%8) → that bin. band_frac =
-    rolloff/128 exactly."""
-    from baskerville_spark.gates.audio_quality import audio_bandwidth
-
-    t = np.arange(256)
-
-    def sine(k, amp):
-        return amp * np.sin(2 * np.pi * k * t / 256.0)
-
-    def plant(i):
-        r = i % 3
-        if r == 0:
-            x = sine(5 + i % 4, 8000) + sine(100, 80)
-        elif r == 1:
-            x = sine(5 + i % 4, 6000) + sine(90 + i % 5, 6000)
-        else:
-            x = sine(80 + i % 8, 7000)
-        return [planted_clip("bw", i, np.rint(x).astype("<i2"))]
-
-    clips = rows_from_range(spark, 150, plant, PLANT_SCHEMA)
-    return audio_bandwidth(clips).select(
-        "clip_id", "rolloff_bin", "band_frac"
-    )
-
-
-_Q111_SQL = """
-WITH idx AS (SELECT unnest(generate_series(0, 149)) AS i),
-r AS (
-  SELECT i,
-         CASE i % 3
-           WHEN 0 THEN 5 + i % 4
-           WHEN 1 THEN 90 + i % 5
-           ELSE 80 + i % 8
-         END AS rolloff_bin
-  FROM idx)
-SELECT printf('bw_%06d', i) AS clip_id,
-       CAST(rolloff_bin AS INT) AS rolloff_bin,
-       CAST(rolloff_bin AS DOUBLE) / 128 AS band_frac
-FROM r
-"""
-
-
-# --------------------------------------------------------------------------
 # q112: gap-fill to a regular grid — forward fill WITHOUT a calendar join
 # (each observation explodes its own fill span off one lead() window).
 # --------------------------------------------------------------------------
@@ -2757,197 +2002,6 @@ sel AS (
 SELECT user_id, grid_slot, value, event_type,
        grid_slot = slot AS is_observed
 FROM sel
-"""
-
-
-# --------------------------------------------------------------------------
-# q113: G.711 mu-law telephony codec — a REAL ITU-T codec (pure-integer
-# spec, bit-exact vectorized implementation, audio.py:mulaw_compress/
-# expand) under the hash gate via its closed-form segment arithmetic.
-# --------------------------------------------------------------------------
-
-
-def q113_mulaw_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """mu-law gate: constant-amplitude clips sweeping the int16 range (both
-    signs, all 8 log segments, the ±32768→32635 clip case at i=0) are
-    pcm→mulaw transcoded through the real reencode pipeline and decoded
-    back; the quantized value must equal the G.711 segment arithmetic
-    (sign·(((v>>(e+3) & 15)·8 + 132)<<e) − 132) restated in SQL."""
-    from baskerville_spark.gates.audio_dedup import reencode
-
-    def plant(i):
-        xv = (i * 437) % 65536 - 32768
-        return [planted_clip("mu", i, np.full(40, xv, dtype="<i2"))]
-
-    mu = reencode(rows_from_range(spark, 150, plant, PLANT_SCHEMA), "mulaw")
-    return au.decode_pass(
-        mu.select("clip_id", "bytes", "codec"),
-        T.StructType.fromDDL(
-            "clip_id string, mu_val long, n_samples long, uniform boolean"
-        ),
-        lambda x: (int(x[0]), len(x), bool((x == x[0]).all())),
-    )
-
-
-_Q113_SQL = """
-WITH idx AS (SELECT unnest(generate_series(0, 149)) AS i),
-x AS (SELECT i, (i * 437) % 65536 - 32768 AS xv FROM idx),
-g AS (SELECT i, xv, LEAST(ABS(xv), 32635) + 132 AS v FROM x),
-e AS (SELECT i, xv, v,
-             CASE WHEN v < 256 THEN 0 WHEN v < 512 THEN 1
-                  WHEN v < 1024 THEN 2 WHEN v < 2048 THEN 3
-                  WHEN v < 4096 THEN 4 WHEN v < 8192 THEN 5
-                  WHEN v < 16384 THEN 6 ELSE 7 END AS ex
-      FROM g),
-d AS (SELECT i, xv,
-             (((v // CAST(POW(2, ex + 3) AS BIGINT)) % 16) * 8 + 132)
-               * CAST(POW(2, ex) AS BIGINT) - 132 AS mag
-      FROM e)
-SELECT printf('mu_%06d', i) AS clip_id,
-       CAST(CASE WHEN xv < 0 THEN -mag ELSE mag END AS BIGINT) AS mu_val,
-       CAST(40 AS BIGINT) AS n_samples,
-       TRUE AS uniform
-FROM d
-"""
-
-
-# --------------------------------------------------------------------------
-# q117: per-clip VAD summary (speech fraction / utterance count / longest
-# gap) — the curator's sampling metrics without q105's per-segment fan-out.
-# --------------------------------------------------------------------------
-
-
-def q117_vad_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """VAD-stats gate: (lead | tone m1 | gap g | tone m2 | tail) plants
-    with g sweeping 0..128 around min_gap=64 — g >= 64 splits (2
-    utterances, gap excluded from speech), 0 < g < 64 stays one utterance
-    WITH the pause counted as speech, g = 0 is one contiguous tone; all
-    integers closed-form, speech_frac = exact int/int IEEE division."""
-    from baskerville_spark.gates.audio_quality import audio_vad_stats
-
-    def plant(i):
-        lead, tail = 30 + i % 10, 20 + i % 7
-        m1, m2 = 150 + (i % 4) * 25, 100 + (i % 6) * 15
-        g = (i % 5) * 32
-        pcm = np.concatenate(
-            [
-                np.zeros(lead, dtype="<i2"),
-                np.full(m1, 5000, dtype="<i2"),
-                np.zeros(g, dtype="<i2"),
-                np.full(m2, -4000, dtype="<i2"),
-                np.zeros(tail, dtype="<i2"),
-            ]
-        )
-        return [planted_clip("vd", i, pcm)]
-
-    clips = rows_from_range(spark, 150, plant, PLANT_SCHEMA)
-    return audio_vad_stats(clips).select(
-        "clip_id", "n_samples", "n_utterances", "speech_samples",
-        "speech_frac", "longest_gap",
-    )
-
-
-_Q117_SQL = """
-WITH idx AS (SELECT unnest(generate_series(0, 149)) AS i),
-p AS (
-  SELECT i,
-         30 + i % 10 AS lead_n, 20 + i % 7 AS tail_n,
-         150 + (i % 4) * 25 AS m1, 100 + (i % 6) * 15 AS m2,
-         (i % 5) * 32 AS g
-  FROM idx),
-s AS (
-  SELECT i, lead_n + m1 + g + m2 + tail_n AS n,
-         CASE WHEN g >= 64 THEN 2 ELSE 1 END AS utt,
-         CASE WHEN g >= 64 OR g = 0 THEN m1 + m2
-              ELSE m1 + g + m2 END AS sp,
-         CAST(g AS BIGINT) AS lg
-  FROM p)
-SELECT printf('vd_%06d', i) AS clip_id,
-       CAST(n AS BIGINT) AS n_samples,
-       CAST(utt AS INT) AS n_utterances,
-       CAST(sp AS BIGINT) AS speech_samples,
-       CAST(sp AS DOUBLE) / CAST(n AS DOUBLE) AS speech_frac,
-       lg AS longest_gap
-FROM s
-"""
-
-
-# --------------------------------------------------------------------------
-# q122: mergeable DECODE state (checks/audio_state.py) — the payload analog
-# of q119/q121: each ingest batch is decoded EXACTLY ONCE (mapInArrow, no
-# payload shuffle) into a tiny additive state row; folding three batch
-# states must equal the one-pass state bit-for-bit (counts, exact sample
-# totals, clipping counters, decimal |PCM| sum). Oracle: the generator's
-# plants are closed-form — decode failures are exactly the drift
-# partition's mp3-codec rows (generator.py MP3_MOD/MP3_OFF, the q21
-# derivation) — plus bounded-verdict booleans for the DSP fields DuckDB
-# cannot decode (the FIXTURES.md §closed-form-audio pattern).
-# --------------------------------------------------------------------------
-
-
-def q122_audio_decode_state(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from baskerville_spark.gates import audio_state as audio_state_mod
-    from baskerville_spark.generator import GenConfig
-
-    cfg = GenConfig(n_rows=1000, n_parts=4)
-    clips_p, _ = _shared_clip_fixture(spark, cfg)
-    clips = spark.read.parquet(clips_p)
-    # three disjoint ingest batches (hash-split; pmod — xxhash64 is signed)
-    batch_states = [
-        audio_state_mod.decode_state(
-            clips.where(F.pmod(F.xxhash64("clip_id"), F.lit(3)) == i)
-        )
-        for i in range(3)
-    ]
-    st = batch_states[0]
-    for b in batch_states[1:]:
-        st = st.unionByName(b)
-    merged = audio_state_mod.merge_decode_states(st).alias("m")
-    direct = audio_state_mod.decode_state(clips).alias("d")
-    res = merged.join(direct, "part_id").select(
-        F.col("part_id").cast("int").alias("part_id"),
-        F.col("m.n_clips").alias("n_clips"),
-        F.col("m.n_failed").alias("n_failed"),
-        (F.col("m.n_decoded") == F.col("d.n_decoded")).alias("decoded_match"),
-        (F.col("m.total_samples") == F.col("d.total_samples")).alias(
-            "samples_match"
-        ),
-        (F.col("m.clipped_samples") == F.col("d.clipped_samples")).alias(
-            "clipped_match"
-        ),
-        (F.col("m.sum_abs") == F.col("d.sum_abs")).alias("sum_abs_match"),
-    )
-    out = res.persist()
-    out.count()
-    return out
-
-
-def _q122_sql() -> str:
-    """Closed-form expected decode-state summary: per-part row counts from
-    the contiguous block assignment of the gate's 1000 rows over 4 parts;
-    decode failures are exactly the drift partition's mp3 rows (codec
-    unseen by every decoder). The DSP fields are engine-side bounded
-    verdicts (TRUE = merged fold equals the one-pass state)."""
-    import baskerville_spark.generator as g
-
-    n_rows, n_parts = 1000, 4
-    last = n_parts - 1
-    p_of = f"least({last}, (i*{n_parts})//{n_rows})"
-    return f"""
-WITH idx AS (SELECT unnest(generate_series(0, {n_rows - 1})) AS i),
-fl AS (
-  SELECT CAST({p_of} AS INT) AS part_id,
-         ({p_of} = {last} AND i % {g.SNR_MOD} != {g.SNR_OFF}
-            AND i % {g.MP3_MOD} = {g.MP3_OFF}) AS mp3
-  FROM idx)
-SELECT part_id,
-       CAST(COUNT(*) AS BIGINT) AS n_clips,
-       CAST(SUM(CASE WHEN mp3 THEN 1 ELSE 0 END) AS BIGINT) AS n_failed,
-       TRUE AS decoded_match,
-       TRUE AS samples_match,
-       TRUE AS clipped_match,
-       TRUE AS sum_abs_match
-FROM fl GROUP BY part_id
 """
 
 
@@ -3423,50 +2477,6 @@ FROM fd3
 """
 
 
-# --------------------------------------------------------------------------
-# q131: audio DC-offset QA vs exact closed forms — the third leg of the
-# ingest QA trio (levels q83, frequency content q84). 300 synthesized
-# square-wave clips around a known integer bias v (samples alternate
-# v+a / v−a over an even count, so the exact mean IS v); the measurement
-# path is the REAL one — encode pcm_s16le, Arrow decode, per-clip mean
-# (functions/audio_quality.audio_dc_offset) — and v/32768 is exact in
-# float64 (power-of-two denominator), so the gate emits the raw doubles
-# and the oracle rebuilds them arithmetically; no tolerance booleans
-# needed. dc_suspect is JVM-side Column algebra over dc_frac (the policy
-# threshold never forces a re-decode).
-# --------------------------------------------------------------------------
-
-
-def q131_dc_offset(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from baskerville_spark.gates.audio_quality import audio_dc_offset
-
-    def plant(i):
-        v = -2000 + (i * 37) % 4001
-        a = 100 + (i % 5) * 200
-        n = 120 + (i % 6) * 40  # even: the ±a legs cancel exactly
-        x = np.empty(n, dtype="<i2")
-        x[0::2] = v + a
-        x[1::2] = v - a
-        return [planted_clip("bias", i, x)]
-
-    clips = rows_from_range(spark, 300, plant, PLANT_SCHEMA)
-    return audio_dc_offset(clips).select(
-        "clip_id", "n_samples", "dc_mean", "dc_frac", "dc_suspect"
-    )
-
-
-_Q131_SQL = """
-WITH idx AS (SELECT unnest(generate_series(0, 299)) AS i)
-SELECT printf('bias_%06d', i) AS clip_id,
-       CAST(120 + (i % 6) * 40 AS BIGINT) AS n_samples,
-       CAST(-2000 + (i * 37) % 4001 AS DOUBLE) AS dc_mean,
-       CAST(-2000 + (i * 37) % 4001 AS DOUBLE) / 32768.0 AS dc_frac,
-       ABS(CAST(-2000 + (i * 37) % 4001 AS DOUBLE) / 32768.0) > 0.02
-         AS dc_suspect
-FROM idx
-"""
-
-
 def q133_mannwhitney(spark: SparkSession, sf_dir: str) -> DataFrame:
     from baskerville_spark.gates.drift import mannwhitney_u
 
@@ -3510,74 +2520,6 @@ SELECT g AS l_returnflag,
                 - tie_sum / (CAST(n_all AS DOUBLE) * (n_all - 1))))),
          6) AS z
 FROM pg CROSS JOIN tot
-"""
-
-
-# --------------------------------------------------------------------------
-# q134: stereo channel-balance QA vs exact closed forms — dead channels,
-# polarity flips and fake stereo are invisible to every mono stat. 300
-# synthesized interleaved ±square-wave channel pairs: constant magnitudes
-# make RMS exact (sqrt(a^2)=a in IEEE), alternating signs make the means
-# exactly zero, and the four planted cases have closed-form correlation
-# (+1 in-phase, −1 inverted, 0 quadrature-square, NULL dead channel).
-# The measurement path is the REAL one (encode pcm_s16le, Arrow decode,
-# deinterleave, Pearson); correlation is ROUND(,6)-pinned to ±1/0 and the
-# dB balance is a |measured−analytic|<1e-9 bounded verdict (libm log10
-# may differ in the last ulp between numpy and the JVM — the q83 pattern).
-# --------------------------------------------------------------------------
-
-
-def q134_channel_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from baskerville_spark.gates.audio_quality import audio_channel_balance
-
-    def plant(i):
-        a = 400 + (i * 31) % 2000
-        b = 300 + (i * 17) % 1500
-        nf = 160 + (i % 5) * 32  # divisible by 4: full ± periods
-        s2 = np.tile(np.array([1, -1], np.int64), nf // 2)
-        cs = i % 4
-        left = a * s2
-        if cs == 0:
-            right = b * s2
-        elif cs == 1:
-            right = -b * s2
-        elif cs == 2:
-            right = b * np.tile(np.array([1, 1, -1, -1], np.int64), nf // 4)
-        else:
-            right = np.zeros(nf, np.int64)
-        x = np.empty(nf * 2, dtype="<i2")
-        x[0::2] = left
-        x[1::2] = right
-        return [planted_clip("st", i, x, a=a, b=b, cs=cs)]
-
-    clips = rows_from_range(
-        spark, 300, plant, PLANT_SCHEMA + ", a int, b int, cs int"
-    )
-    bal = audio_channel_balance(clips).join(
-        clips.select("clip_id", "a", "b", "cs"), "clip_id"
-    )
-    expected = F.lit(20.0) * (
-        F.log10(F.col("a") / F.lit(32768.0))
-        - F.log10(F.col("b") / F.lit(32768.0))
-    )
-    return bal.select(
-        "clip_id",
-        "n_frames",
-        F.round("corr_lr", 6).alias("corr_r6"),
-        F.when(F.col("cs") == 3, F.lit(None).cast("boolean"))
-        .otherwise(F.abs(F.col("balance_db") - expected) < 1e-9)
-        .alias("ok_balance"),
-    )
-
-
-_Q134_SQL = """
-WITH idx AS (SELECT unnest(generate_series(0, 299)) AS i)
-SELECT printf('st_%06d', i) AS clip_id,
-       CAST(160 + (i % 5) * 32 AS BIGINT) AS n_frames,
-       CAST(CASE i % 4 WHEN 0 THEN 1.0 WHEN 1 THEN -1.0
-                       WHEN 2 THEN 0.0 ELSE NULL END AS DOUBLE) AS corr_r6,
-       CASE WHEN i % 4 = 3 THEN NULL ELSE TRUE END AS ok_balance
-FROM idx
 """
 
 
@@ -3688,58 +2630,6 @@ SELECT doc_id,
          ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) <= 20000
          AS selected
 FROM t
-"""
-
-
-# --------------------------------------------------------------------------
-# q141: cross-modal label-conflict detection — identical DECODED audio
-# content carrying disagreeing transcripts (label noise). The corpus is the
-# generator's all-clean partition 0 (every clip unique content, canonical
-# transcript) plus a planted flac transcode of every 13th clip under a new
-# id with a mutated transcript: the engine must recover EXACTLY the planted
-# groups, keyed by min(clip_id), with both members as violation rows.
-# Oracle: closed-form over the generator's mod arithmetic (a clean
-# partition has no dup-renames, no mp3, no SNR rows — FIXTURES.md §1).
-# --------------------------------------------------------------------------
-
-
-def q141_label_conflicts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from baskerville_spark.gates.audio_dedup import (
-        conflicting_label_groups,
-        reencode,
-    )
-    from baskerville_spark.generator import GenConfig, generate_clips
-
-    # n_rows=250/n_parts=1 is BYTE-IDENTICAL to partition 0 of the
-    # 4-partition 1000-row table (row i is a pure function of its index
-    # and clean-part status; both configs make 0..249 clean) but skips
-    # synthesizing the 750 rows the gate would filter out.
-    cfg = GenConfig(n_rows=250, n_parts=1)
-    clips = generate_clips(spark, cfg).persist()
-    suffix = F.substring("clip_id", 6, 12).cast("int")
-    plants = clips.where(suffix % 13 == 5)
-    variants = (
-        reencode(plants, "flac")
-        .withColumn("clip_id", F.concat(F.lit("lblv_"), F.col("clip_id")))
-        .withColumn(
-            "transcript", F.concat(F.col("transcript"), F.lit(" variant"))
-        )
-    )
-    corpus = clips.unionByName(variants)
-    out = conflicting_label_groups(corpus).persist()
-    out.count()
-    clips.unpersist()
-    return out
-
-
-_Q141_SQL = """
-WITH idx AS (SELECT unnest(generate_series(0, 249)) AS s),
-g AS (SELECT s FROM idx WHERE s % 13 = 5)
-SELECT printf('clip_%012d', s) AS group_key,
-       CASE WHEN m = 1 THEN 'lblv_' || printf('clip_%012d', s)
-            ELSE printf('clip_%012d', s) END AS clip_id,
-       CAST(2 AS BIGINT) AS n_labels
-FROM g CROSS JOIN (VALUES (0), (1)) AS v(m)
 """
 
 
@@ -3952,24 +2842,24 @@ _GATES = (
     (q102_zorder, _Q102_SQL),
     (q103_compaction_plan, _Q103_SQL),
     (q104_streaming_rolling_psi, _q104_sql),
-    (q105_split_on_silence, _Q105_SQL),
+    (audio_quality.q105_split_on_silence, audio_quality.Q105_SQL),
     (text.q106_transcript_edit_distance, text.Q106_SQL),
-    (q107_concat_roundtrip, _Q107_SQL),
+    (audio_quality.q107_concat_roundtrip, audio_quality.Q107_SQL),
     (q108_enrich_with_state, _Q108_SQL),
-    (q109_audio_align, _Q109_SQL),
+    (audio_dedup.q109_audio_align, audio_dedup.Q109_SQL),
     (q110_sensitive_crypto, _Q110_SQL),
-    (q111_bandwidth, _Q111_SQL),
+    (audio_quality.q111_bandwidth, audio_quality.Q111_SQL),
     (q112_gap_fill, _Q112_SQL),
-    (q113_mulaw_roundtrip, _Q113_SQL),
+    (audio_dedup.q113_mulaw_roundtrip, audio_dedup.Q113_SQL),
     (bpe.q114_bpe_merges, bpe.Q114_SQL),
     (bpe.q115_bpe_tokenize, bpe.Q115_SQL),
     (dedup.q116_dedup_lines, dedup.Q116_SQL),
-    (q117_vad_stats, _Q117_SQL),
+    (audio_quality.q117_vad_stats, audio_quality.Q117_SQL),
     (validation.q118_constraint_suite, validation.Q118_SQL),
     (validation.q119_incremental_stats, validation.Q119_SQL),
     (validation.q120_histogram_drift_state, validation._q120_sql),
     (validation.q121_state_table_stats, validation._q121_sql),
-    (q122_audio_decode_state, _q122_sql),
+    (audio_state.q122_audio_decode_state, audio_state._q122_sql),
     (validation.q123_streaming_state_ingest, validation.Q123_SQL),
     (q124_schema_evolution, _Q124_SQL),
     (q125_partition_completeness, _Q125_SQL),
@@ -3978,17 +2868,17 @@ _GATES = (
     (q128_metric_anomalies, _Q128_SQL),
     (q129_suggest_constraints, _Q129_SQL),
     (q130_functional_deps, _Q130_SQL),
-    (q131_dc_offset, _Q131_SQL),
+    (audio_quality.q131_dc_offset, audio_quality.Q131_SQL),
     (validation.q132_chi2_mix, validation.Q132_SQL),
     (q133_mannwhitney, _Q133_SQL),
-    (q134_channel_balance, _Q134_SQL),
+    (audio_quality.q134_channel_balance, audio_quality.Q134_SQL),
     (validation.q135_zipf_fit, validation.Q135_SQL),
     (validation.q136_spearman, validation.Q136_SQL),
     (validation.q137_mutual_info, validation.Q137_SQL),
     (validation.q138_benford, validation.Q138_SQL),
     (q139_rolling_chi2, _q139_sql),
     (q140_token_budget, _Q140_SQL),
-    (q141_label_conflicts, _Q141_SQL),
+    (audio_dedup.q141_label_conflicts, audio_dedup.Q141_SQL),
     (q142_wasserstein_drift, _Q142_SQL),
     (q143_partition_spill, _Q143_SQL),
     (q144_out_of_order, _Q144_SQL),
@@ -4031,8 +2921,8 @@ _GATES = (
     (q37_geo_localize, _Q37_SQL),
     (similarity.q38_ivf_topk, similarity.Q38_SQL),  # exact top-k on the planted-cluster corpus
     (q39_streaming_dedup, _Q39_SQL),
-    (q40_image_features, _Q40_SQL),
-    (q41_video_frame_sample, _Q41_SQL),
+    (multimodal.q40_image_features, multimodal.Q40_SQL),
+    (multimodal.q41_video_frame_sample, multimodal.Q41_SQL),
     (uniqueness.q42_dup_exemplars, uniqueness.Q42_SQL),
     (web.q43_first_last_agg, web.Q33_SQL),  # same semantics, single-shuffle plan
     (validation.q44_drift_verdicts, validation._q44_sql),
@@ -4074,17 +2964,17 @@ _GATES = (
     (packing.q79_chunk_documents, packing.Q79_SQL),
     (text.q80_vocab_oov, text.Q80_SQL),
     (q81_robust_outliers, _Q81_SQL),
-    (q82_audio_content_dedup, _Q82_SQL),
-    (q83_loudness_stats, _Q83_SQL),
-    (q84_spectral_features, _Q84_SQL),
-    (q85_resample, _Q85_SQL),
+    (audio_dedup.q82_audio_content_dedup, audio_dedup.Q82_SQL),
+    (audio_quality.q83_loudness_stats, audio_quality.Q83_SQL),
+    (audio_quality.q84_spectral_features, audio_quality.Q84_SQL),
+    (audio_quality.q85_resample, audio_quality.Q85_SQL),
     (similarity.q86_batched_topk, similarity.Q86_SQL),
-    (q87_downmix, _Q87_SQL),
-    (q88_trim_silence, _Q88_SQL),
-    (q89_segment, _Q89_SQL),
-    (q90_normalize, _Q90_SQL),
-    (q91_overlay, _Q91_SQL),
-    (q92_pitch, _Q92_SQL),
+    (audio_quality.q87_downmix, audio_quality.Q87_SQL),
+    (audio_quality.q88_trim_silence, audio_quality.Q88_SQL),
+    (audio_quality.q89_segment, audio_quality.Q89_SQL),
+    (audio_quality.q90_normalize, audio_quality.Q90_SQL),
+    (audio_quality.q91_overlay, audio_quality.Q91_SQL),
+    (audio_quality.q92_pitch, audio_quality.Q92_SQL),
     (bloom.q93_bloom_semi, bloom.Q93_SQL),
     (q94_snapshot_diff, _Q94_SQL),
     (q95_incremental_revalidation, _q95_sql),

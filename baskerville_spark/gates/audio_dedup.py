@@ -32,13 +32,22 @@ from typing import Iterator
 
 import numpy as np
 import pyarrow as pa
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.pandas.types import to_arrow_schema
 
 from baskerville_spark import audio
+from baskerville_spark import audio as au
 from baskerville_spark.gates.audio_quality import _per_clip
+from baskerville_spark.gates.fixtures import _shared_clip_fixture
+from baskerville_spark.generator import (
+    PLANT_SCHEMA,
+    GenConfig,
+    generate_clips,
+    planted_clip,
+    rows_from_range,
+)
 
 FINGERPRINT_SCHEMA = T.StructType(
     [
@@ -304,3 +313,208 @@ def conflicting_label_groups(clips: DataFrame) -> DataFrame:
         labeled.join(F.broadcast(groups), "content_md5")
         .select("group_key", "clip_id", "n_labels")
     )
+
+
+# --------------------------------------------------------------------------
+# q82: content-based audio dedup (decode-level, cross-container)
+# --------------------------------------------------------------------------
+
+
+def q82_audio_content_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Audio content dedup across containers: every 17th canonical clip is
+    transcoded to flac under a new id ('xcopy_' prefix) and unioned in; the
+    engine must recover EXACTLY the planted (original, copy) pairs by
+    joining on md5 of the DECODED sample stream (byte-level hashing cannot
+    see through the container change). One mapInArrow decode pass per
+    payload; the pair join carries only (16-byte hash, id) rows.
+
+    ORACLE: the planted set is closed-form over the generator's mod
+    arithmetic — s%17==5 minus the dup-renamed ids (no clip_s row exists)
+    and the mp3-codec drift rows (undecodable, so no transcode copy);
+    recall 1.0 and zero false pairs are both under the hash."""
+    cfg = GenConfig(n_rows=1000, n_parts=4)
+    # session-shared generated fixture replaces generate+persist: the two
+    # plan branches re-read cheap parquet instead of re-synthesizing audio
+    clips_p, _ = _shared_clip_fixture(spark, cfg)
+    clips = spark.read.parquet(clips_p)
+    suffix = F.substring("clip_id", 6, 12).cast("int")
+    plants = clips.where(suffix % 17 == 5)
+    copies = reencode(plants, "flac").withColumn(
+        "clip_id", F.concat(F.lit("xcopy_"), F.col("clip_id"))
+    )
+    corpus = clips.unionByName(copies)
+    pairs = content_duplicate_pairs(audio_content_fingerprints(corpus))
+    out = pairs.persist()
+    out.count()
+    return out
+
+
+Q82_SQL = """
+WITH idx AS (SELECT unnest(generate_series(0, 999)) AS s),
+fl AS (
+  SELECT s,
+    least(3, (s*4)//1000) AS part,
+    (s > 0 AND s % 199 = 17
+       AND least(3, (s*4)//1000) = least(3, ((s-1)*4)//1000)
+       AND least(3, (s*4)//1000) <> 0) AS dup_renamed,
+    (least(3, (s*4)//1000) = 3 AND s % 211 <> 31 AND s % 5 = 2) AS mp3
+  FROM idx)
+SELECT printf('clip_%012d', s) AS clip_id_a,
+       'xcopy_' || printf('clip_%012d', s) AS clip_id_b
+FROM fl
+WHERE s % 17 = 5 AND NOT dup_renamed AND NOT mp3
+"""
+
+
+# --------------------------------------------------------------------------
+# q109: offset-invariant audio alignment — recover WHERE a base clip starts
+# inside a delayed/padded twin (the dup variant content_md5 structurally
+# misses: k prepended silence samples change every byte). Coarse int64
+# envelope cross-correlation + exact-dot refinement, candidates-only.
+# --------------------------------------------------------------------------
+
+
+def q109_audio_align(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Alignment gate: constant-amplitude bases (A_i, m_i samples) and
+    planted twins = k_i zero samples ⊕ content. Three twin regimes under
+    one gate: (a) exact delay copies → offset k_i, ratio exactly 1.0,
+    every 3rd stored as flac (per-side codec decode); (b) rescaled copies
+    (amp A_i+1000) → offset k_i, ratio (A_i+1000)/A_i — int64-exact dot
+    algebra to the final IEEE division, bit-equal in both engines;
+    (c) truncated twins (shorter than base: no valid placement) → dropped.
+    k_i is a frame multiple except the i%5==2 stratum (k=100+i%3), which
+    forces the ±1-frame exact-dot refinement off the coarse grid."""
+    def plant(i):
+        amp = 4000 + (i % 8) * 500
+        m = 240 + (i % 5) * 48
+        k = 100 + (i % 3) if i % 5 == 2 else 64 * ((i % 7) + 1)
+        base = np.full(m, amp, dtype="<i2")
+        r = i % 5
+        if r == 1:  # truncated: shorter than base → dropped
+            twin = np.full(m - 50, amp, dtype="<i2")
+        elif r == 3:  # rescaled delay copy
+            twin = np.concatenate(
+                [np.zeros(k, dtype="<i2"),
+                 np.full(m, amp + 1000, dtype="<i2")]
+            )
+        else:  # exact delay copy
+            twin = np.concatenate([np.zeros(k, dtype="<i2"), base])
+        codec = "flac" if (r in (0, 4) and i % 3 == 0) else "pcm_s16le"
+        return [planted_clip("al", i, base), planted_clip("tw", i, twin, codec)]
+
+    clips = rows_from_range(spark, 150, plant, PLANT_SCHEMA)
+    cands = spark.range(150).select(
+        F.format_string("al_%06d", "id").alias("base_id"),
+        F.format_string("tw_%06d", "id").alias("twin_id"),
+    )
+    return audio_align_offsets(clips, cands)
+
+
+Q109_SQL = """
+WITH idx AS (SELECT unnest(generate_series(0, 149)) AS i)
+SELECT printf('al_%06d', i) AS base_id,
+       printf('tw_%06d', i) AS twin_id,
+       CAST(CASE WHEN i % 5 = 2 THEN 100 + (i % 3)
+                 ELSE 64 * ((i % 7) + 1) END AS BIGINT) AS offset_samples,
+       CASE WHEN i % 5 = 3
+            THEN CAST(4000 + (i % 8) * 500 + 1000 AS DOUBLE)
+                 / CAST(4000 + (i % 8) * 500 AS DOUBLE)
+            ELSE 1.0 END AS match_ratio
+FROM idx
+WHERE i % 5 <> 1
+"""
+
+
+# --------------------------------------------------------------------------
+# q113: G.711 mu-law telephony codec — a REAL ITU-T codec (pure-integer
+# spec, bit-exact vectorized implementation, audio.py:mulaw_compress/
+# expand) under the hash gate via its closed-form segment arithmetic.
+# --------------------------------------------------------------------------
+
+
+def q113_mulaw_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """mu-law gate: constant-amplitude clips sweeping the int16 range (both
+    signs, all 8 log segments, the ±32768→32635 clip case at i=0) are
+    pcm→mulaw transcoded through the real reencode pipeline and decoded
+    back; the quantized value must equal the G.711 segment arithmetic
+    (sign·(((v>>(e+3) & 15)·8 + 132)<<e) − 132) restated in SQL."""
+    def plant(i):
+        xv = (i * 437) % 65536 - 32768
+        return [planted_clip("mu", i, np.full(40, xv, dtype="<i2"))]
+
+    mu = reencode(rows_from_range(spark, 150, plant, PLANT_SCHEMA), "mulaw")
+    return au.decode_pass(
+        mu.select("clip_id", "bytes", "codec"),
+        T.StructType.fromDDL(
+            "clip_id string, mu_val long, n_samples long, uniform boolean"
+        ),
+        lambda x: (int(x[0]), len(x), bool((x == x[0]).all())),
+    )
+
+
+Q113_SQL = """
+WITH idx AS (SELECT unnest(generate_series(0, 149)) AS i),
+x AS (SELECT i, (i * 437) % 65536 - 32768 AS xv FROM idx),
+g AS (SELECT i, xv, LEAST(ABS(xv), 32635) + 132 AS v FROM x),
+e AS (SELECT i, xv, v,
+             CASE WHEN v < 256 THEN 0 WHEN v < 512 THEN 1
+                  WHEN v < 1024 THEN 2 WHEN v < 2048 THEN 3
+                  WHEN v < 4096 THEN 4 WHEN v < 8192 THEN 5
+                  WHEN v < 16384 THEN 6 ELSE 7 END AS ex
+      FROM g),
+d AS (SELECT i, xv,
+             (((v // CAST(POW(2, ex + 3) AS BIGINT)) % 16) * 8 + 132)
+               * CAST(POW(2, ex) AS BIGINT) - 132 AS mag
+      FROM e)
+SELECT printf('mu_%06d', i) AS clip_id,
+       CAST(CASE WHEN xv < 0 THEN -mag ELSE mag END AS BIGINT) AS mu_val,
+       CAST(40 AS BIGINT) AS n_samples,
+       TRUE AS uniform
+FROM d
+"""
+
+
+# --------------------------------------------------------------------------
+# q141: cross-modal label-conflict detection — identical DECODED audio
+# content carrying disagreeing transcripts (label noise). The corpus is the
+# generator's all-clean partition 0 (every clip unique content, canonical
+# transcript) plus a planted flac transcode of every 13th clip under a new
+# id with a mutated transcript: the engine must recover EXACTLY the planted
+# groups, keyed by min(clip_id), with both members as violation rows.
+# Oracle: closed-form over the generator's mod arithmetic (a clean
+# partition has no dup-renames, no mp3, no SNR rows — FIXTURES.md §1).
+# --------------------------------------------------------------------------
+
+
+def q141_label_conflicts(spark: SparkSession, sf_dir: str) -> DataFrame:
+    # n_rows=250/n_parts=1 is BYTE-IDENTICAL to partition 0 of the
+    # 4-partition 1000-row table (row i is a pure function of its index
+    # and clean-part status; both configs make 0..249 clean) but skips
+    # synthesizing the 750 rows the gate would filter out.
+    cfg = GenConfig(n_rows=250, n_parts=1)
+    clips = generate_clips(spark, cfg).persist()
+    suffix = F.substring("clip_id", 6, 12).cast("int")
+    plants = clips.where(suffix % 13 == 5)
+    variants = (
+        reencode(plants, "flac")
+        .withColumn("clip_id", F.concat(F.lit("lblv_"), F.col("clip_id")))
+        .withColumn(
+            "transcript", F.concat(F.col("transcript"), F.lit(" variant"))
+        )
+    )
+    corpus = clips.unionByName(variants)
+    out = conflicting_label_groups(corpus).persist()
+    out.count()
+    clips.unpersist()
+    return out
+
+
+Q141_SQL = """
+WITH idx AS (SELECT unnest(generate_series(0, 249)) AS s),
+g AS (SELECT s FROM idx WHERE s % 13 = 5)
+SELECT printf('clip_%012d', s) AS group_key,
+       CASE WHEN m = 1 THEN 'lblv_' || printf('clip_%012d', s)
+            ELSE printf('clip_%012d', s) END AS clip_id,
+       CAST(2 AS BIGINT) AS n_labels
+FROM g CROSS JOIN (VALUES (0), (1)) AS v(m)
+"""

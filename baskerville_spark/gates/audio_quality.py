@@ -38,11 +38,13 @@ from typing import Iterator
 
 import numpy as np
 import pyarrow as pa
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from baskerville_spark import audio
+from baskerville_spark import audio as au
+from baskerville_spark.generator import PLANT_SCHEMA, planted_clip, rows_from_range
 
 FULL_SCALE = 32768.0
 CLIP_LEVEL = 32767  # |sample| >= this counts as clipped
@@ -630,3 +632,681 @@ def audio_channel_balance(clips: DataFrame) -> DataFrame:
         return nf, db_l, db_r, bal, corr
 
     return _per_clip(clips, BALANCE_SCHEMA, _bal)
+
+
+# --------------------------------------------------------------------------
+# q83: audio loudness / clipping QA vs analytic closed forms
+# --------------------------------------------------------------------------
+
+
+def q83_loudness_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Loudness QA gate: 300 synthesized constant-level (DC) clips whose
+    exact peak/RMS dBFS and clipped-sample counts are closed-form
+    (level v = min(500 + (i*613)%40000, 32767): peak = rms = v, clipped
+    iff v hits full scale). The measurement path is the REAL one — encode
+    to pcm_s16le, Arrow decode, per-clip stats (functions/audio_quality) —
+    and the gate emits exact integers plus |measured − analytic| < 1e-9
+    booleans (the q46 bounded-verdict pattern); the oracle rebuilds the
+    integer columns arithmetically and pins the booleans TRUE."""
+    def plant(i):
+        amp = 500 + (i * 613) % 40000
+        v = min(amp, 32767)
+        n = 100 + (i % 7) * 50
+        return [planted_clip("dc", i, np.full(n, v, dtype="<i2"), level=v)]
+
+    clips = rows_from_range(spark, 300, plant, PLANT_SCHEMA + ", level int")
+    stats = audio_loudness_stats(clips).join(
+        clips.select("clip_id", "level"), "clip_id"
+    )
+    expected_db = F.lit(20.0) * F.log10(F.col("level") / F.lit(32768.0))
+    return stats.select(
+        "clip_id",
+        "n_samples",
+        "n_clipped",
+        (F.abs(F.col("peak_dbfs") - expected_db) < 1e-9).alias("ok_peak"),
+        (F.abs(F.col("rms_dbfs") - expected_db) < 1e-9).alias("ok_rms"),
+    )
+
+
+Q83_SQL = """
+WITH idx AS (SELECT unnest(generate_series(0, 299)) AS i)
+SELECT printf('dc_%06d', i) AS clip_id,
+       CAST(100 + (i % 7) * 50 AS BIGINT) AS n_samples,
+       CAST(CASE WHEN 500 + (i * 613) % 40000 >= 32767
+                 THEN 100 + (i % 7) * 50 ELSE 0 END AS BIGINT) AS n_clipped,
+       TRUE AS ok_peak,
+       TRUE AS ok_rms
+FROM idx
+"""
+
+
+# --------------------------------------------------------------------------
+# q84: spectral features vs exact-bin sines
+# --------------------------------------------------------------------------
+
+
+def q84_spectral_features(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Spectral-feature gate: 200 pure sines at exact FFT-bin frequencies
+    (f = k · sr/n_fft with an integer number of periods per window, so the
+    DFT is leakage-free and ALL energy lands in bin k). The measurement
+    path is real (pcm encode → Arrow decode → rFFT); the gate pins the
+    integer dominant_bin to its closed form and bounds the centroid
+    (|centroid − k| < 1e-6 — leakage-free means numerically-zero mass
+    elsewhere). Oracle rebuilds the integers arithmetically."""
+    n_fft = SPECTRAL_N_FFT  # the tones sit on the bins of this window
+
+    def plant(i):
+        k = (i % 40) + 1                      # target bin 1..40
+        n = n_fft + (i % 3) * 100             # >= one full window
+        t = np.arange(n)
+        pcm = (10000 * np.sin(2 * np.pi * k * t / n_fft)).astype("<i2")
+        return [planted_clip("sine", i, pcm, bin_k=k)]
+
+    clips = rows_from_range(spark, 200, plant, PLANT_SCHEMA + ", bin_k int")
+    feats = audio_spectral_features(clips).join(
+        clips.select("clip_id", "bin_k"), "clip_id"
+    )
+    return feats.select(
+        "clip_id",
+        "n_samples",
+        "dominant_bin",
+        (F.abs(F.col("spectral_centroid") - F.col("bin_k")) < 0.5).alias(
+            "ok_centroid"
+        ),
+    )
+
+
+Q84_SQL = """
+WITH idx AS (SELECT unnest(generate_series(0, 199)) AS i)
+SELECT printf('sine_%06d', i) AS clip_id,
+       CAST(256 + (i % 3) * 100 AS BIGINT) AS n_samples,
+       CAST((i % 40) + 1 AS INT) AS dominant_bin,
+       TRUE AS ok_centroid
+FROM idx
+"""
+
+
+# --------------------------------------------------------------------------
+# q85: resample correctness via exact decimation
+# --------------------------------------------------------------------------
+
+
+def q85_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Resampling gate: the q84 exact-bin sines (k cycles per 256 samples
+    at 16 kHz) resampled to 8 kHz. An integer downsample ratio makes the
+    linear-interp grid land exactly on original samples, so the result is
+    pure decimation: output length = n//2 (closed form) and the tone is
+    now 2k cycles per 256-sample window — dominant_bin doubles, an integer
+    the oracle rebuilds arithmetically. Pipeline under test: decode →
+    interp → re-encode → decode → rFFT, all Arrow passes."""
+    n_fft = SPECTRAL_N_FFT  # the tones sit on the bins of this window
+
+    def plant(i):
+        k = (i % 20) + 1                      # keep 2k well under Nyquist
+        n = n_fft * 2 + (i % 3) * 100
+        t = np.arange(n)
+        pcm = (10000 * np.sin(2 * np.pi * k * t / n_fft)).astype("<i2")
+        return [planted_clip("rs", i, pcm, sr_hz=16000, bin_k=k)]
+
+    clips = rows_from_range(
+        spark, 150, plant, PLANT_SCHEMA + ", sr_hz int, bin_k int"
+    )
+    down = audio_resample(clips, target_sr=8000)
+    feats = audio_spectral_features(down).join(
+        clips.select("clip_id", "bin_k"), "clip_id"
+    )
+    return feats.select(
+        "clip_id",
+        "n_samples",
+        "dominant_bin",
+        (F.col("dominant_bin") == F.lit(2) * F.col("bin_k")).alias("ok_doubled"),
+    )
+
+
+Q85_SQL = """
+WITH idx AS (SELECT unnest(generate_series(0, 149)) AS i)
+SELECT printf('rs_%06d', i) AS clip_id,
+       CAST((512 + (i % 3) * 100) // 2 AS BIGINT) AS n_samples,
+       CAST(2 * ((i % 20) + 1) AS INT) AS dominant_bin,
+       TRUE AS ok_doubled
+FROM idx
+"""
+
+
+# --------------------------------------------------------------------------
+# q87: stereo downmix via exact channel identities
+# --------------------------------------------------------------------------
+
+
+def q87_downmix(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Downmix gate: interleaved stereo masters where either L == R (mean
+    is bit-identical to L) or R == 0 (mean = rint(L/2) — same tone, half
+    amplitude). Both closed forms keep the tone's FFT bin: the gate pins
+    frame counts (total//2, minus an odd-tail truncation case) and the
+    dominant bin through the REAL decode → deinterleave → mean → encode →
+    decode → rFFT pipeline."""
+    n_fft = SPECTRAL_N_FFT  # the tones sit on the bins of this window
+
+    def plant(i):
+        k = (i % 30) + 1
+        frames = n_fft + (i % 3) * 100
+        t = np.arange(frames)
+        left = (10000 * np.sin(2 * np.pi * k * t / n_fft)).astype("<i2")
+        right = left if i % 2 == 0 else np.zeros(frames, dtype="<i2")
+        stereo = np.empty(frames * 2, dtype="<i2")
+        stereo[0::2] = left
+        stereo[1::2] = right
+        if i % 11 == 3:
+            stereo = np.append(stereo, np.int16(7))  # odd tail: one orphan sample
+        return [planted_clip("st", i, stereo, bin_k=k)]
+
+    clips = rows_from_range(spark, 150, plant, PLANT_SCHEMA + ", bin_k int")
+    mono = audio_downmix(clips)
+    feats = audio_spectral_features(mono).join(
+        clips.select("clip_id", "bin_k"), "clip_id"
+    )
+    return feats.select(
+        "clip_id",
+        "n_samples",
+        "dominant_bin",
+        (F.col("dominant_bin") == F.col("bin_k")).alias("ok_bin"),
+    )
+
+
+Q87_SQL = """
+WITH idx AS (SELECT unnest(generate_series(0, 149)) AS i)
+SELECT printf('st_%06d', i) AS clip_id,
+       CAST(256 + (i % 3) * 100 AS BIGINT) AS n_samples,
+       CAST((i % 30) + 1 AS INT) AS dominant_bin,
+       TRUE AS ok_bin
+FROM idx
+"""
+
+
+# --------------------------------------------------------------------------
+# q88/q89: silence trim + fixed-window segmentation, closed-form plants
+# --------------------------------------------------------------------------
+
+
+def _q88_q89_clips(spark: SparkSession):
+    """150 pcm clips with EXACT closed-form structure: lead = i%40 zero
+    samples, body = (i%50)+1 samples of constant 5000, tail = i%25 zeros."""
+
+    def plant(i):
+        lead, body, tail = i % 40, (i % 50) + 1, i % 25
+        pcm = np.concatenate(
+            [
+                np.zeros(lead, dtype="<i2"),
+                np.full(body, 5000, dtype="<i2"),
+                np.zeros(tail, dtype="<i2"),
+            ]
+        )
+        return [planted_clip("tr", i, pcm)]
+
+    return rows_from_range(spark, 150, plant, PLANT_SCHEMA)
+
+
+def q88_trim_silence(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Endpoint silence trim gate: planted (lead zeros | constant body |
+    tail zeros) clips — the trimmed length must equal the body length
+    EXACTLY, a pure integer the oracle rebuilds from the same mods. Runs
+    the real decode → trim → encode → decode pipeline."""
+    trimmed = audio_trim_silence(_q88_q89_clips(spark))
+    return au.decode_pass(
+        trimmed.select("clip_id", "bytes", "codec"),
+        T.StructType.fromDDL("clip_id string, trimmed_samples long"),
+        lambda pcm: (len(pcm),),
+    )
+
+
+Q88_SQL = """
+WITH idx AS (SELECT unnest(generate_series(0, 149)) AS i)
+SELECT printf('tr_%06d', i) AS clip_id,
+       CAST((i % 50) + 1 AS BIGINT) AS trimmed_samples
+FROM idx
+"""
+
+
+def q89_segment(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Fixed-window segmentation gate: every clip (n = lead+body+tail,
+    closed form) split into 32-sample windows → per-clip segment count =
+    ceil(n/32) and last-segment length = n mod 32 (or 32), both integers
+    the oracle rebuilds arithmetically."""
+    segs = audio_segment(_q88_q89_clips(spark), segment_samples=32)
+    return segs.groupBy("clip_id").agg(
+        F.count(F.lit(1)).cast("long").alias("n_segments"),
+        F.max(F.col("seg_idx")).cast("int").alias("max_idx"),
+        F.min("n_samples").cast("long").alias("min_seg_len"),
+        F.sum("n_samples").cast("long").alias("total_samples"),
+    )
+
+
+Q89_SQL = """
+WITH idx AS (SELECT unnest(generate_series(0, 149)) AS i),
+m AS (
+  SELECT i, CAST(i % 40 + (i % 50) + 1 + i % 25 AS BIGINT) AS n FROM idx)
+SELECT printf('tr_%06d', i) AS clip_id,
+       (n + 31) // 32 AS n_segments,
+       CAST((n - 1) // 32 AS INT) AS max_idx,
+       CASE WHEN n % 32 = 0 THEN 32 ELSE n % 32 END AS min_seg_len,
+       n AS total_samples
+FROM m
+"""
+
+
+# --------------------------------------------------------------------------
+# q90/q91/q92: gain normalization, overlay mixing, pitch detection —
+# closed-form PCM plants through the real decode->transform->encode passes
+# --------------------------------------------------------------------------
+
+
+def _len_peak(df: DataFrame) -> DataFrame:
+    """(clip_id, n_samples, peak |sample|) of every clip in ``df``."""
+    return au.decode_pass(
+        df.select("clip_id", "bytes", "codec"),
+        T.StructType.fromDDL("clip_id string, n_samples long, peak long"),
+        lambda pcm: (len(pcm), int(abs(pcm.astype("int32")).max())),
+    )
+
+
+def q90_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Peak-normalization gate: constant-amplitude plants (A_i closed-form,
+    one-in-13 silent and therefore dropped) through the real decode ->
+    gain -> round -> encode pass, alternating lossless codecs. The
+    normalized peak must equal the target EXACTLY (integer), and lengths
+    must survive unchanged — both rebuilt arithmetically by the oracle."""
+    def plant(i):
+        amp = 0 if i % 13 == 5 else (i % 317) * 197 + 123
+        n = (i % 50) + 5
+        codec = "pcm_s16le" if i % 2 == 0 else "flac"
+        return [planted_clip("nm", i, np.full(n, amp, dtype="<i2"), codec)]
+
+    clips = rows_from_range(spark, 150, plant, PLANT_SCHEMA)
+    return _len_peak(audio_normalize(clips))
+
+
+Q90_SQL = """
+WITH idx AS (SELECT unnest(generate_series(0, 149)) AS i)
+SELECT printf('nm_%06d', i) AS clip_id,
+       CAST((i % 50) + 5 AS BIGINT) AS n_samples,
+       CAST(20000 AS BIGINT) AS peak
+FROM idx
+WHERE i % 13 <> 5
+"""
+
+
+def q91_overlay(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Overlay-mix gate: constant-amplitude base (A_i) + overlay (B_i)
+    plants with different lengths, one-in-5 overlays missing (inner-join
+    drop). Saturating int16 addition gives peak = LEAST(A+B, 32767) and
+    length = LEAST(n_a, n_b) — pure integers the oracle rebuilds. Runs the
+    real join -> decode both -> mix -> encode pipeline."""
+    def base(i):
+        pcm = np.full((i % 40) + 10, 25000 + (i % 8) * 1000, dtype="<i2")
+        return [planted_clip("ov", i, pcm)]
+
+    def over(i):
+        if i % 5 == 2:
+            return []  # missing overlay: the inner join drops the clip
+        pcm = np.full((i % 33) + 5, (i % 10) * 1000 + 500, dtype="<i2")
+        return [planted_clip("ov", i, pcm)]
+
+    mixed = audio_overlay(
+        rows_from_range(spark, 150, base, PLANT_SCHEMA),
+        rows_from_range(spark, 150, over, PLANT_SCHEMA),
+    )
+    return _len_peak(mixed)
+
+
+Q91_SQL = """
+WITH idx AS (SELECT unnest(generate_series(0, 149)) AS i)
+SELECT printf('ov_%06d', i) AS clip_id,
+       CAST(LEAST((i % 40) + 10, (i % 33) + 5) AS BIGINT) AS n_samples,
+       CAST(LEAST(25000 + (i % 8) * 1000 + (i % 10) * 1000 + 500, 32767)
+            AS BIGINT) AS peak
+FROM idx
+WHERE i % 5 <> 2
+"""
+
+
+def q92_pitch(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Pitch-detection gate: 512-sample square waves with planted even
+    periods p in [4, 42] — the exact-int64 autocorrelation argmax must
+    recover p itself (not a harmonic: ties break to the smallest lag, and
+    (W-p) > (W-2p) separates the fundamental from its multiples)."""
+    def plant(i):
+        p = 2 * ((i % 20) + 2)
+        t = np.arange(512)
+        pcm = np.where((t % p) < p // 2, 8000, -8000).astype("<i2")
+        return [planted_clip("pt", i, pcm, planted_p=p)]
+
+    clips = rows_from_range(spark, 150, plant, PLANT_SCHEMA + ", planted_p int")
+    periods = audio_pitch_period(clips)
+    return periods.join(clips.select("clip_id", "planted_p"), "clip_id").select(
+        "clip_id",
+        "period_samples",
+        (F.col("period_samples") == F.col("planted_p")).alias("ok_period"),
+    )
+
+
+Q92_SQL = """
+WITH idx AS (SELECT unnest(generate_series(0, 149)) AS i)
+SELECT printf('pt_%06d', i) AS clip_id,
+       CAST(2 * ((i % 20) + 2) AS INT) AS period_samples,
+       TRUE AS ok_period
+FROM idx
+"""
+
+
+# --------------------------------------------------------------------------
+# q105/q106: interior silence splitting + edit-distance transcript QA
+# --------------------------------------------------------------------------
+
+
+def q105_split_on_silence(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """VAD-split gate: planted (lead | tone a | gap g | tone b | tail)
+    clips — when g >= min_gap (64) the clip must split into exactly the
+    two tones with exact lengths; when g < 64 the interior pause stays
+    inside one segment of length a+g+b. Pure integers from the plant mods,
+    through the real decode → split → encode pipeline."""
+    def plant(i):
+        lead, a, g, b, tail = (
+            i % 30, (i % 40) + 5, (i % 90) + 20, (i % 25) + 3, i % 50,
+        )
+        pcm = np.concatenate([
+            np.zeros(lead, dtype="<i2"),
+            np.full(a, 5000, dtype="<i2"),
+            np.zeros(g, dtype="<i2"),
+            np.full(b, 5000, dtype="<i2"),
+            np.zeros(tail, dtype="<i2"),
+        ])
+        return [planted_clip("vd", i, pcm)]
+
+    clips = rows_from_range(spark, 150, plant, PLANT_SCHEMA)
+    segs = audio_split_on_silence(clips)
+    return segs.groupBy("clip_id").agg(
+        F.count(F.lit(1)).cast("long").alias("n_segments"),
+        F.min("n_samples").cast("long").alias("min_len"),
+        F.max("n_samples").cast("long").alias("max_len"),
+        F.sum("n_samples").cast("long").alias("voiced_total"),
+    )
+
+
+Q105_SQL = """
+WITH idx AS (SELECT unnest(generate_series(0, 149)) AS i),
+m AS (
+  SELECT i, CAST((i % 40) + 5 AS BIGINT) AS a,
+         CAST((i % 90) + 20 AS BIGINT) AS g,
+         CAST((i % 25) + 3 AS BIGINT) AS b
+  FROM idx)
+SELECT printf('vd_%06d', i) AS clip_id,
+       CASE WHEN g >= 64 THEN 2 ELSE 1 END AS n_segments,
+       CASE WHEN g >= 64 THEN LEAST(a, b) ELSE a + g + b END AS min_len,
+       CASE WHEN g >= 64 THEN GREATEST(a, b) ELSE a + g + b END AS max_len,
+       CASE WHEN g >= 64 THEN a + b ELSE a + g + b END AS voiced_total
+FROM m
+"""
+
+
+# --------------------------------------------------------------------------
+# q107: segment -> reassemble round trip (grouped payload shuffle)
+# --------------------------------------------------------------------------
+
+
+def q107_concat_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Reassembly gate: the q88 closed-form clips are segmented into
+    32-sample windows, shuffled apart, and reassembled via the grouped
+    applyInPandas concat — the round trip must be LOSSLESS: reassembled
+    length equals the closed-form original length, and the decoded content
+    hash equals the original's (compared clip-by-clip through a join of
+    the two fingerprint passes; `content_ok` must be all-true under the
+    hash gate, lengths rebuilt arithmetically by the oracle)."""
+    from baskerville_spark.gates.audio_dedup import audio_content_fingerprints
+
+    clips = _q88_q89_clips(spark)
+    rebuilt = audio_concat_segments(audio_segment(clips, segment_samples=32))
+    fp_orig = audio_content_fingerprints(clips).select(
+        "clip_id", F.col("content_md5").alias("md5_orig")
+    )
+    fp_re = audio_content_fingerprints(
+        rebuilt.withColumn("part_id", F.lit(0))
+    ).select("clip_id", F.col("content_md5").alias("md5_re"))
+    return (
+        rebuilt.select("clip_id", "n_samples")
+        .join(fp_orig, "clip_id")
+        .join(fp_re, "clip_id")
+        .select(
+            "clip_id",
+            "n_samples",
+            (F.col("md5_orig") == F.col("md5_re")).alias("content_ok"),
+        )
+    )
+
+
+Q107_SQL = """
+WITH idx AS (SELECT unnest(generate_series(0, 149)) AS i)
+SELECT printf('tr_%06d', i) AS clip_id,
+       CAST(i % 40 + (i % 50) + 1 + i % 25 AS BIGINT) AS n_samples,
+       TRUE AS content_ok
+FROM idx
+"""
+
+
+# --------------------------------------------------------------------------
+# q111: spectral-rolloff band-limit QA — WHERE the energy stops, the
+# upsampled/lowpassed-junk screen q84's dominant-bin cannot express.
+# --------------------------------------------------------------------------
+
+
+def q111_bandwidth(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Band-limit gate over exact-bin sine plants (256-sample clips,
+    n_fft=256 — bin energies are closed-form, orthogonal bins don't leak):
+    (a) low-band signal (bin 5+i%4, amp 8000) + a 100× weaker top-band
+    component (bin 100, amp 80, 1e-4 of the energy) → rolloff must IGNORE
+    the trace hf and read the low bin; (b) two EQUAL components (bins
+    5+i%4 and 90+i%5) → 50% each, so the 0.99 threshold lands on the HIGH
+    bin; (c) high-band only (bin 80+i%8) → that bin. band_frac =
+    rolloff/128 exactly."""
+    t = np.arange(256)
+
+    def sine(k, amp):
+        return amp * np.sin(2 * np.pi * k * t / 256.0)
+
+    def plant(i):
+        r = i % 3
+        if r == 0:
+            x = sine(5 + i % 4, 8000) + sine(100, 80)
+        elif r == 1:
+            x = sine(5 + i % 4, 6000) + sine(90 + i % 5, 6000)
+        else:
+            x = sine(80 + i % 8, 7000)
+        return [planted_clip("bw", i, np.rint(x).astype("<i2"))]
+
+    clips = rows_from_range(spark, 150, plant, PLANT_SCHEMA)
+    return audio_bandwidth(clips).select(
+        "clip_id", "rolloff_bin", "band_frac"
+    )
+
+
+Q111_SQL = """
+WITH idx AS (SELECT unnest(generate_series(0, 149)) AS i),
+r AS (
+  SELECT i,
+         CASE i % 3
+           WHEN 0 THEN 5 + i % 4
+           WHEN 1 THEN 90 + i % 5
+           ELSE 80 + i % 8
+         END AS rolloff_bin
+  FROM idx)
+SELECT printf('bw_%06d', i) AS clip_id,
+       CAST(rolloff_bin AS INT) AS rolloff_bin,
+       CAST(rolloff_bin AS DOUBLE) / 128 AS band_frac
+FROM r
+"""
+
+
+# --------------------------------------------------------------------------
+# q117: per-clip VAD summary (speech fraction / utterance count / longest
+# gap) — the curator's sampling metrics without q105's per-segment fan-out.
+# --------------------------------------------------------------------------
+
+
+def q117_vad_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """VAD-stats gate: (lead | tone m1 | gap g | tone m2 | tail) plants
+    with g sweeping 0..128 around min_gap=64 — g >= 64 splits (2
+    utterances, gap excluded from speech), 0 < g < 64 stays one utterance
+    WITH the pause counted as speech, g = 0 is one contiguous tone; all
+    integers closed-form, speech_frac = exact int/int IEEE division."""
+    def plant(i):
+        lead, tail = 30 + i % 10, 20 + i % 7
+        m1, m2 = 150 + (i % 4) * 25, 100 + (i % 6) * 15
+        g = (i % 5) * 32
+        pcm = np.concatenate(
+            [
+                np.zeros(lead, dtype="<i2"),
+                np.full(m1, 5000, dtype="<i2"),
+                np.zeros(g, dtype="<i2"),
+                np.full(m2, -4000, dtype="<i2"),
+                np.zeros(tail, dtype="<i2"),
+            ]
+        )
+        return [planted_clip("vd", i, pcm)]
+
+    clips = rows_from_range(spark, 150, plant, PLANT_SCHEMA)
+    return audio_vad_stats(clips).select(
+        "clip_id", "n_samples", "n_utterances", "speech_samples",
+        "speech_frac", "longest_gap",
+    )
+
+
+Q117_SQL = """
+WITH idx AS (SELECT unnest(generate_series(0, 149)) AS i),
+p AS (
+  SELECT i,
+         30 + i % 10 AS lead_n, 20 + i % 7 AS tail_n,
+         150 + (i % 4) * 25 AS m1, 100 + (i % 6) * 15 AS m2,
+         (i % 5) * 32 AS g
+  FROM idx),
+s AS (
+  SELECT i, lead_n + m1 + g + m2 + tail_n AS n,
+         CASE WHEN g >= 64 THEN 2 ELSE 1 END AS utt,
+         CASE WHEN g >= 64 OR g = 0 THEN m1 + m2
+              ELSE m1 + g + m2 END AS sp,
+         CAST(g AS BIGINT) AS lg
+  FROM p)
+SELECT printf('vd_%06d', i) AS clip_id,
+       CAST(n AS BIGINT) AS n_samples,
+       CAST(utt AS INT) AS n_utterances,
+       CAST(sp AS BIGINT) AS speech_samples,
+       CAST(sp AS DOUBLE) / CAST(n AS DOUBLE) AS speech_frac,
+       lg AS longest_gap
+FROM s
+"""
+
+
+# --------------------------------------------------------------------------
+# q131: audio DC-offset QA vs exact closed forms — the third leg of the
+# ingest QA trio (levels q83, frequency content q84). 300 synthesized
+# square-wave clips around a known integer bias v (samples alternate
+# v+a / v−a over an even count, so the exact mean IS v); the measurement
+# path is the REAL one — encode pcm_s16le, Arrow decode, per-clip mean
+# (functions/audio_quality.audio_dc_offset) — and v/32768 is exact in
+# float64 (power-of-two denominator), so the gate emits the raw doubles
+# and the oracle rebuilds them arithmetically; no tolerance booleans
+# needed. dc_suspect is JVM-side Column algebra over dc_frac (the policy
+# threshold never forces a re-decode).
+# --------------------------------------------------------------------------
+
+
+def q131_dc_offset(spark: SparkSession, sf_dir: str) -> DataFrame:
+    def plant(i):
+        v = -2000 + (i * 37) % 4001
+        a = 100 + (i % 5) * 200
+        n = 120 + (i % 6) * 40  # even: the ±a legs cancel exactly
+        x = np.empty(n, dtype="<i2")
+        x[0::2] = v + a
+        x[1::2] = v - a
+        return [planted_clip("bias", i, x)]
+
+    clips = rows_from_range(spark, 300, plant, PLANT_SCHEMA)
+    return audio_dc_offset(clips).select(
+        "clip_id", "n_samples", "dc_mean", "dc_frac", "dc_suspect"
+    )
+
+
+Q131_SQL = """
+WITH idx AS (SELECT unnest(generate_series(0, 299)) AS i)
+SELECT printf('bias_%06d', i) AS clip_id,
+       CAST(120 + (i % 6) * 40 AS BIGINT) AS n_samples,
+       CAST(-2000 + (i * 37) % 4001 AS DOUBLE) AS dc_mean,
+       CAST(-2000 + (i * 37) % 4001 AS DOUBLE) / 32768.0 AS dc_frac,
+       ABS(CAST(-2000 + (i * 37) % 4001 AS DOUBLE) / 32768.0) > 0.02
+         AS dc_suspect
+FROM idx
+"""
+
+
+# --------------------------------------------------------------------------
+# q134: stereo channel-balance QA vs exact closed forms — dead channels,
+# polarity flips and fake stereo are invisible to every mono stat. 300
+# synthesized interleaved ±square-wave channel pairs: constant magnitudes
+# make RMS exact (sqrt(a^2)=a in IEEE), alternating signs make the means
+# exactly zero, and the four planted cases have closed-form correlation
+# (+1 in-phase, −1 inverted, 0 quadrature-square, NULL dead channel).
+# The measurement path is the REAL one (encode pcm_s16le, Arrow decode,
+# deinterleave, Pearson); correlation is ROUND(,6)-pinned to ±1/0 and the
+# dB balance is a |measured−analytic|<1e-9 bounded verdict (libm log10
+# may differ in the last ulp between numpy and the JVM — the q83 pattern).
+# --------------------------------------------------------------------------
+
+
+def q134_channel_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
+    def plant(i):
+        a = 400 + (i * 31) % 2000
+        b = 300 + (i * 17) % 1500
+        nf = 160 + (i % 5) * 32  # divisible by 4: full ± periods
+        s2 = np.tile(np.array([1, -1], np.int64), nf // 2)
+        cs = i % 4
+        left = a * s2
+        if cs == 0:
+            right = b * s2
+        elif cs == 1:
+            right = -b * s2
+        elif cs == 2:
+            right = b * np.tile(np.array([1, 1, -1, -1], np.int64), nf // 4)
+        else:
+            right = np.zeros(nf, np.int64)
+        x = np.empty(nf * 2, dtype="<i2")
+        x[0::2] = left
+        x[1::2] = right
+        return [planted_clip("st", i, x, a=a, b=b, cs=cs)]
+
+    clips = rows_from_range(
+        spark, 300, plant, PLANT_SCHEMA + ", a int, b int, cs int"
+    )
+    bal = audio_channel_balance(clips).join(
+        clips.select("clip_id", "a", "b", "cs"), "clip_id"
+    )
+    expected = F.lit(20.0) * (
+        F.log10(F.col("a") / F.lit(32768.0))
+        - F.log10(F.col("b") / F.lit(32768.0))
+    )
+    return bal.select(
+        "clip_id",
+        "n_frames",
+        F.round("corr_lr", 6).alias("corr_r6"),
+        F.when(F.col("cs") == 3, F.lit(None).cast("boolean"))
+        .otherwise(F.abs(F.col("balance_db") - expected) < 1e-9)
+        .alias("ok_balance"),
+    )
+
+
+Q134_SQL = """
+WITH idx AS (SELECT unnest(generate_series(0, 299)) AS i)
+SELECT printf('st_%06d', i) AS clip_id,
+       CAST(160 + (i % 5) * 32 AS BIGINT) AS n_frames,
+       CAST(CASE i % 4 WHEN 0 THEN 1.0 WHEN 1 THEN -1.0
+                       WHEN 2 THEN 0.0 ELSE NULL END AS DOUBLE) AS corr_r6,
+       CASE WHEN i % 4 = 3 THEN NULL ELSE TRUE END AS ok_balance
+FROM idx
+"""

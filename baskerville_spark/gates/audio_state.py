@@ -27,11 +27,14 @@ ratios derive from the merged row; settled clips are never re-decoded.
 from __future__ import annotations
 
 import numpy as np
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+import baskerville_spark.generator as g
 from baskerville_spark import audio
+from baskerville_spark.gates.fixtures import _shared_clip_fixture
+from baskerville_spark.generator import GenConfig
 
 __all__ = ["decode_state", "merge_decode_states"]
 
@@ -93,3 +96,77 @@ def merge_decode_states(states: DataFrame) -> DataFrame:
     # Spark widens decimal sums (38,0)->(38,0) capped at max precision; pin
     # the declared type so merged and direct states compare schema-equal.
     return out.withColumn("sum_abs", F.col("sum_abs").cast("decimal(38,0)"))
+
+
+# --------------------------------------------------------------------------
+# q122: mergeable DECODE state (checks/audio_state.py) — the payload analog
+# of q119/q121: each ingest batch is decoded EXACTLY ONCE (mapInArrow, no
+# payload shuffle) into a tiny additive state row; folding three batch
+# states must equal the one-pass state bit-for-bit (counts, exact sample
+# totals, clipping counters, decimal |PCM| sum). Oracle: the generator's
+# plants are closed-form — decode failures are exactly the drift
+# partition's mp3-codec rows (generator.py MP3_MOD/MP3_OFF, the q21
+# derivation) — plus bounded-verdict booleans for the DSP fields DuckDB
+# cannot decode (the FIXTURES.md §closed-form-audio pattern).
+# --------------------------------------------------------------------------
+
+
+def q122_audio_decode_state(spark: SparkSession, sf_dir: str) -> DataFrame:
+    cfg = GenConfig(n_rows=1000, n_parts=4)
+    clips_p, _ = _shared_clip_fixture(spark, cfg)
+    clips = spark.read.parquet(clips_p)
+    # three disjoint ingest batches (hash-split; pmod — xxhash64 is signed)
+    batch_states = [
+        decode_state(
+            clips.where(F.pmod(F.xxhash64("clip_id"), F.lit(3)) == i)
+        )
+        for i in range(3)
+    ]
+    st = batch_states[0]
+    for b in batch_states[1:]:
+        st = st.unionByName(b)
+    merged = merge_decode_states(st).alias("m")
+    direct = decode_state(clips).alias("d")
+    res = merged.join(direct, "part_id").select(
+        F.col("part_id").cast("int").alias("part_id"),
+        F.col("m.n_clips").alias("n_clips"),
+        F.col("m.n_failed").alias("n_failed"),
+        (F.col("m.n_decoded") == F.col("d.n_decoded")).alias("decoded_match"),
+        (F.col("m.total_samples") == F.col("d.total_samples")).alias(
+            "samples_match"
+        ),
+        (F.col("m.clipped_samples") == F.col("d.clipped_samples")).alias(
+            "clipped_match"
+        ),
+        (F.col("m.sum_abs") == F.col("d.sum_abs")).alias("sum_abs_match"),
+    )
+    out = res.persist()
+    out.count()
+    return out
+
+
+def _q122_sql() -> str:
+    """Closed-form expected decode-state summary: per-part row counts from
+    the contiguous block assignment of the gate's 1000 rows over 4 parts;
+    decode failures are exactly the drift partition's mp3 rows (codec
+    unseen by every decoder). The DSP fields are engine-side bounded
+    verdicts (TRUE = merged fold equals the one-pass state)."""
+    n_rows, n_parts = 1000, 4
+    last = n_parts - 1
+    p_of = f"least({last}, (i*{n_parts})//{n_rows})"
+    return f"""
+WITH idx AS (SELECT unnest(generate_series(0, {n_rows - 1})) AS i),
+fl AS (
+  SELECT CAST({p_of} AS INT) AS part_id,
+         ({p_of} = {last} AND i % {g.SNR_MOD} != {g.SNR_OFF}
+            AND i % {g.MP3_MOD} = {g.MP3_OFF}) AS mp3
+  FROM idx)
+SELECT part_id,
+       CAST(COUNT(*) AS BIGINT) AS n_clips,
+       CAST(SUM(CASE WHEN mp3 THEN 1 ELSE 0 END) AS BIGINT) AS n_failed,
+       TRUE AS decoded_match,
+       TRUE AS samples_match,
+       TRUE AS clipped_match,
+       TRUE AS sum_abs_match
+FROM fl GROUP BY part_id
+"""

@@ -22,7 +22,8 @@ from typing import Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 # Optional-dependency seam: when Pillow is importable (real clusters), the
@@ -268,3 +269,87 @@ def make_bmp(width: int, height: int, rgb: tuple[int, int, int]) -> bytes:
         + b"\x00" * 16
     )
     return header + pixels
+
+
+def q40_image_features(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Image decode + feature extraction over binary payloads (multimodal
+    plumbing, brief §multimodal): real numpy BMP decode inside mapInPandas;
+    every 17th item is a corrupt 'jpeg' exercising the decode_ok=false
+    path. Images are synthesized in-session (binary payloads can't live in
+    the shared testdata) with closed-form features, so the DuckDB oracle
+    reproduces them arithmetically."""
+    rows = []
+    for i in range(240):
+        if i % 17 == 0:
+            rows.append((f"img_{i:04d}", bytearray(b"\xff\xd8garbage"), "jpeg"))
+        else:
+            c = (i * 7) % 256
+            rows.append(
+                (f"img_{i:04d}", bytearray(make_bmp(16 + i % 16, 8 + i % 8, (c, c, c))), "bmp")
+            )
+    df = spark.createDataFrame(
+        rows, "item_id string, payload binary, fmt string"
+    ).repartition(spark.sparkContext.defaultParallelism)
+    out = image_features(df)
+    return out.select(
+        "item_id",
+        "width",
+        "height",
+        "n_channels",
+        F.round("mean_luma", 4).alias("mean_luma"),
+        "ahash",  # solid-color images: no cell exceeds the mean → 0
+        F.col("decode_ok").cast("int").alias("decode_ok"),
+    )
+
+
+Q40_SQL = """
+WITH idx AS (SELECT unnest(generate_series(0, 239)) AS i)
+SELECT 'img_' || lpad(CAST(i AS VARCHAR), 4, '0') AS item_id,
+       CASE WHEN i % 17 = 0 THEN NULL ELSE CAST(16 + i % 16 AS INT) END AS width,
+       CASE WHEN i % 17 = 0 THEN NULL ELSE CAST(8 + i % 8 AS INT) END AS height,
+       CASE WHEN i % 17 = 0 THEN NULL ELSE 3 END AS n_channels,
+       CASE WHEN i % 17 = 0 THEN NULL ELSE CAST((i * 7) % 256 AS DOUBLE) END AS mean_luma,
+       CASE WHEN i % 17 = 0 THEN NULL ELSE 0 END AS ahash,
+       CAST(i % 17 <> 0 AS INT) AS decode_ok
+FROM idx
+"""
+
+
+def q41_video_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Video frame sampling over binary payloads (multimodal plumbing):
+    every-5th-frame sampling inside mapInPandas, narrow rows out; every
+    13th item is a corrupt 'mp4' exercising the stubbed-codec path.
+    Synthesized in-session with closed-form per-frame luma so the DuckDB
+    oracle reproduces the sampled features arithmetically."""
+    w, h = 4, 4
+    rows = []
+    for i in range(60):
+        if i % 13 == 0:
+            rows.append((f"vid_{i:04d}", bytearray(b"\x00\x00mp4garbage"), "mp4"))
+            continue
+        n = 12 + i % 10
+        frames = b"".join(bytes([(i * 5 + j * 3) % 256]) * (w * h) for j in range(n))
+        payload = (
+            w.to_bytes(4, "little") + h.to_bytes(4, "little") + n.to_bytes(4, "little") + frames
+        )
+        rows.append((f"vid_{i:04d}", bytearray(payload), "rawgray_video"))
+    df = spark.createDataFrame(
+        rows, "item_id string, payload binary, fmt string"
+    ).repartition(spark.sparkContext.defaultParallelism)
+    return sample_frames(df).withColumn(
+        "decode_ok", F.col("decode_ok").cast("int")
+    )
+
+
+Q41_SQL = """
+WITH v AS (SELECT unnest(generate_series(0, 59)) AS i),
+f AS (SELECT i, unnest(generate_series(0, 11 + i % 10)) AS j FROM v WHERE i % 13 <> 0)
+SELECT 'vid_' || lpad(CAST(i AS VARCHAR), 4, '0') AS item_id,
+       CAST(j AS INT) AS frame_idx,
+       CAST((i * 5 + j * 3) % 256 AS DOUBLE) AS mean_luma,
+       1 AS decode_ok
+FROM f WHERE j % 5 = 0
+UNION ALL
+SELECT 'vid_' || lpad(CAST(i AS VARCHAR), 4, '0'), NULL, NULL, 0
+FROM v WHERE i % 13 = 0
+"""
