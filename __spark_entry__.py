@@ -26,25 +26,30 @@ from baskerville_spark.gates import (
     audio_state,
     bloom,
     bpe,
+    classify,
     dedup,
+    drift,
+    features,
     fixtures,
+    gbm,
+    geo,
     graph,
+    history,
+    iforest,
     multimodal,
     packing,
+    sampling,
     similarity,
+    stats,
+    suggest,
     text,
     uniqueness,
     validation,
     web,
 )
 from baskerville_spark.gates.fixtures import (
-    DRIFT_VALUE_EDGES,
     EVENT_TYPES,
-    _DRIFT_COLS,
     _drain_to_memory,
-    _drift_agg_sql,
-    _drift_fixture,
-    _drift_frac,
     _gate_tmp_detach,
     _q21_sql,
     _shared_clip_fixture,
@@ -92,53 +97,6 @@ def entry(spark: SparkSession) -> DataFrame:
     return web.q01_request_sets(spark, "/root/testdata/sf0.001")
 
 
-#: per-stratum sampling fractions as hex-byte thresholds over md5(event_id):
-#: a row is sampled when the first two hex chars of its md5 are < threshold
-#: (n/256 resolution). md5 is identical across engines, so the "random"
-#: variate is deterministic and the DuckDB oracle reproduces the exact
-#: sample — unlike seedful sampleBy, whose Bernoulli draw is engine-private
-#: (sampleBy itself stays demonstrated in test_checks.py).
-SAMPLE_THRESHOLDS = {
-    "click": "40",     # 64/256  = 0.25
-    "view": "19",      # 25/256  ≈ 0.10
-    "purchase": "80",  # 128/256 = 0.50
-    "signup": "33",    # 51/256  ≈ 0.20
-    "error": "0c",     # 12/256  ≈ 0.05
-}
-
-
-def q28_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic hash-based stratified sampling (the oracle-checkable
-    form of the reference's sampleBy, tasks.py:1486-1499): md5(event_id) is
-    the uniform variate; each stratum keeps rows under its hex threshold.
-    Scale: a pure map-side filter — no shuffle, no state, reproducible
-    across engines, runs, and partitionings (sampleBy's seed is only stable
-    for a fixed partitioning)."""
-    e = _t(spark, sf_dir, "events")
-    thr = F.create_map(
-        *[F.lit(x) for kv in SAMPLE_THRESHOLDS.items() for x in kv]
-    )
-    variate = F.substring(F.md5(F.col("event_id").cast("string")), 1, 2)
-    return (
-        e.where(variate < F.element_at(thr, F.col("event_type")))
-        .groupBy("event_type")
-        .agg(F.count(F.lit(1)).alias("n_sampled"))
-    )
-
-
-def _q28_sql() -> str:
-    cases = " ".join(
-        f"WHEN '{t}' THEN '{h}'" for t, h in SAMPLE_THRESHOLDS.items()
-    )
-    return f"""
-SELECT event_type, COUNT(*) AS n_sampled
-FROM events
-WHERE substring(md5(CAST(event_id AS VARCHAR)), 1, 2)
-      < (CASE event_type {cases} END)
-GROUP BY event_type
-"""
-
-
 def q29_state_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental state upsert (reference request-set cache full_outer merge,
     request_set_cache.py:370-400) via runtime.state.upsert_state."""
@@ -169,34 +127,6 @@ SELECT COALESCE(u.user_id, s.user_id) AS user_id,
        CASE WHEN u.user_id IS NOT NULL THEN u.n_events ELSE s.n_events END AS n_events,
        CASE WHEN u.user_id IS NOT NULL THEN u.updated_at ELSE s.updated_at END AS updated_at
 FROM s FULL OUTER JOIN u ON s.user_id = u.user_id
-"""
-
-
-def q37_geo_localize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Vectorized pandas-UDF + broadcast lookup-table pattern (reference
-    compute_geotime, udfs.py:41-62, minus the tzwhere dependency): a
-    360-entry nautical-timezone table is broadcast once and indexed inside
-    an Arrow-batched pandas UDF; local-time math stays JVM-side."""
-    from baskerville_spark.gates.geo import localize_events
-
-    e = _t(spark, sf_dir, "events")
-    lon = (F.col("user_id") * 37 % 360 - 180).cast("int")
-    return localize_events(e.withColumn("lon", lon))
-
-
-_Q37_SQL = """
-WITH x AS (
-  SELECT user_id, ts,
-         CAST((user_id * 37) % 360 - 180 AS INT) AS lon
-  FROM events),
-y AS (
-  SELECT user_id, lon,
-         CAST(floor((lon + 7.5) / 15.0) AS INT) AS tz_offset, ts
-  FROM x)
-SELECT user_id, lon, tz_offset,
-       COUNT(CASE WHEN EXTRACT(hour FROM ts + to_hours(tz_offset)) < 6
-                  THEN 1 END) AS n_night_events
-FROM y GROUP BY 1, 2, 3
 """
 
 
@@ -402,474 +332,6 @@ f AS (
 SELECT lang, COUNT(*) AS n_docs, CAST(SUM(n_chars) AS BIGINT) AS sum_chars,
        CAST(SUM(ingest_flag) AS BIGINT) AS n_flag
 FROM f GROUP BY lang
-"""
-
-
-# ---------------------------------------------------------------------------
-# Q53/Q54 — feature-prep operators the reference delegated to Spark ML,
-#           expressed natively: standard scaling and frequency string
-#           indexing (closes two former §2.11 non-goal rows with oracles)
-# ---------------------------------------------------------------------------
-
-def q53_standard_scale(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """StandardScaler semantics ((x − mean)/stddev_samp per column;
-    reference anomaly_model.py StandardScaler stage) as native expressions:
-    ONE aggregate computes every column's moments, rides back via a
-    broadcast-able crossJoin of the 1-row stats, and the scaled projection
-    stays in whole-stage codegen — no ML pipeline object, no VectorUDT
-    round-trip. Output pinned to the 100 smallest (orderkey, linenumber)
-    rows with rounded values so the gate hashes stably."""
-    li = _t(spark, sf_dir, "lineitem")
-    cols = ["l_quantity", "l_extendedprice", "l_discount"]
-    stats = li.agg(
-        *[F.avg(F.col(c)).alias(f"{c}__mu") for c in cols],
-        *[F.stddev_samp(F.col(c)).alias(f"{c}__sd") for c in cols],
-    )
-    scaled = li.crossJoin(F.broadcast(stats)).select(
-        "l_orderkey",
-        "l_linenumber",
-        *[
-            F.round(
-                (F.col(c) - F.col(f"{c}__mu")) / F.col(f"{c}__sd"), 6
-            ).alias(f"{c}_scaled")
-            for c in cols
-        ],
-    )
-    return scaled.orderBy("l_orderkey", "l_linenumber").limit(100)
-
-
-_Q53_SQL = """
-WITH s AS (
-  SELECT AVG(l_quantity) AS mu_q, STDDEV_SAMP(l_quantity) AS sd_q,
-         AVG(l_extendedprice) AS mu_e, STDDEV_SAMP(l_extendedprice) AS sd_e,
-         AVG(l_discount) AS mu_d, STDDEV_SAMP(l_discount) AS sd_d
-  FROM lineitem)
-SELECT l_orderkey, l_linenumber,
-       ROUND((l_quantity - mu_q) / sd_q, 6) AS l_quantity_scaled,
-       ROUND((l_extendedprice - mu_e) / sd_e, 6) AS l_extendedprice_scaled,
-       ROUND((l_discount - mu_d) / sd_d, 6) AS l_discount_scaled
-FROM lineitem, s
-ORDER BY l_orderkey, l_linenumber LIMIT 100
-"""
-
-
-def q54_string_index(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """StringIndexer semantics (labels indexed by DESCENDING frequency,
-    deterministic value tie-break; reference anomaly_model.py
-    StringIndexer stage) as a plain aggregate + window: one shuffle for
-    the counts, a window over the tiny label table for the index. The
-    label→index map is exactly what the ML stage would learn, minus the
-    opaque model object — and at 10^12 rows the counts aggregate is the
-    only full-data pass."""
-    e = _t(spark, sf_dir, "events")
-    counts = e.groupBy(F.col("event_type").alias("label")).agg(
-        F.count(F.lit(1)).alias("n")
-    )
-    w = Window.orderBy(F.desc("n"), F.asc("label"))
-    return counts.select(
-        "label", "n", (F.row_number().over(w) - 1).cast("int").alias("label_index")
-    )
-
-
-_Q54_SQL = """
-SELECT event_type AS label, COUNT(*) AS n,
-       CAST(ROW_NUMBER() OVER (ORDER BY COUNT(*) DESC, event_type ASC) - 1
-            AS INTEGER) AS label_index
-FROM events GROUP BY event_type
-"""
-
-
-# ---------------------------------------------------------------------------
-# Q55 — the real anomaly model: deterministic Isolation Forest (driver-
-#       trained on a capped sample, Arrow-batch scored) must isolate the
-#       planted outliers with recall 1.0 and zero false positives
-# ---------------------------------------------------------------------------
-
-def q55_iforest_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The reference's core anomaly model (external Scala spark-iforest
-    jar, anomaly_model.py:13,160-209) rebuilt as a pure-numpy deterministic
-    Isolation Forest (ml/iforest.py): training on a hard-capped
-    hash-threshold sample driver-side, scoring as one Arrow-batched
-    projection pass. Fixture: two features from the embeddings table with
-    every 50th vector shifted +25 — far outside the data range, so a
-    correct forest MUST rank exactly those as the top-|planted| anomalies.
-    The gate hashes the flagged id set against the planted id set in SQL:
-    a single false positive or miss breaks it. (The score values
-    themselves are not SQL-reproducible — the set-equality verdict is the
-    oracle-checkable contract, same pattern as q46.)"""
-    from baskerville_spark.gates.iforest import top_anomalies, train_iforest
-
-    emb = _t(spark, sf_dir, "embeddings")
-    feats = emb.select(
-        "vec_id",
-        (
-            F.element_at("embedding", 1).cast("double")
-            + F.when(F.col("vec_id") % 50 == 0, F.lit(25.0)).otherwise(F.lit(0.0))
-        ).alias("f1"),
-        (
-            F.element_at("embedding", 2).cast("double")
-            + F.when(F.col("vec_id") % 50 == 0, F.lit(25.0)).otherwise(F.lit(0.0))
-        ).alias("f2"),
-    )
-    n_planted = feats.where(F.col("vec_id") % 50 == 0).count()
-    forest = train_iforest(feats, "vec_id", ["f1", "f2"])
-    top = top_anomalies(feats, forest, "vec_id", ["f1", "f2"], k=n_planted)
-    return top.select(F.col("id").alias("vec_id"), F.lit(1).alias("flagged"))
-
-
-_Q55_SQL = """
-SELECT vec_id, 1 AS flagged FROM embeddings WHERE vec_id % 50 = 0
-"""
-
-
-# ---------------------------------------------------------------------------
-# Q56 — the supervised labeler: deterministic gradient-boosted stumps must
-#       reproduce a wide-margin planted labeling exactly
-# ---------------------------------------------------------------------------
-
-def q56_gbm_labeler(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The reference's supervised attack labeler (GBM over request-set
-    features, SURVEY §2.11) rebuilt as deterministic gradient-boosted
-    stumps (ml/gbm.py: driver fit on a hard-capped hash-deterministic
-    sample with an EXACT prefix-sum stump search — no RNG anywhere —
-    Arrow-batched scoring). Fixture: positives (vec_id ≡ 0 mod 40) get
-    +5.0 on the first embedding component, a margin the boosted stumps
-    must carve exactly; the gate hashes predicted-positive ids against
-    the planted labeling, so one misclassified row breaks it."""
-    from baskerville_spark.gates.gbm import predict_label, train_gbm
-
-    emb = _t(spark, sf_dir, "embeddings")
-    feats = emb.select(
-        "vec_id",
-        (
-            F.element_at("embedding", 1).cast("double")
-            + F.when(F.col("vec_id") % 40 == 0, F.lit(5.0)).otherwise(F.lit(0.0))
-        ).alias("f1"),
-        F.element_at("embedding", 2).cast("double").alias("f2"),
-        (F.col("vec_id") % 40 == 0).cast("double").alias("label"),
-    )
-    model = train_gbm(feats, "vec_id", ["f1", "f2"], "label")
-    pred = predict_label(feats, model, "vec_id", ["f1", "f2"])
-    return pred.where(F.col("predicted") == 1).select(
-        F.col("id").alias("vec_id"), "predicted"
-    )
-
-
-_Q56_SQL = """
-SELECT vec_id, 1 AS predicted FROM embeddings WHERE vec_id % 40 = 0
-"""
-
-
-# ---------------------------------------------------------------------------
-# Q57 — the COMPLETE reference feature vector in one funnel
-#       (GenerateFeatures: base_spark.py:445-458 composing the 39 feature
-#        classes; SURVEY §2.4/§2.8 — see functions/features.py for the
-#        per-column reference-class map)
-# ---------------------------------------------------------------------------
-
-def q57_feature_vector(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Every reference feature family over the events table, per user:
-    pre-row projections -> ONE groupBy(user_id) agg -> post-agg
-    ratio/rate columns — the reference's pre/group/post structure
-    (feature_manager.py:150-205) with its exact guard semantics (rate
-    default at dt=0: feature_request_rate.py:35-41; the /0.01
-    zero-denominator ratio fallback: feature_css_to_html_ratio.py:44-50).
-
-    Plan: the lag window partitions by user_id; the per-(user, type)
-    count window and the final groupBy both reuse that partitioning
-    (HashPartitioning(user) satisfies ClusteredDistribution(user, type))
-    — the reference's top-page self-join (feature_top_page_total.py:
-    30-48) costs an extra shuffle; the window form doesn't. The gate
-    keeps the reference's EXACT countDistinct semantics, whose
-    multi-distinct Expand adds two exchanges; the HLL form
-    (exact_distinct=False, graded by q46) is the single-exchange
-    10^12-row configuration — plan pinned in tests/test_features.py."""
-    from baskerville_spark.gates.features import feature_vector
-
-    return feature_vector(_t(spark, sf_dir, "events"))
-
-
-_Q57_SQL = """
-WITH pre AS (
-  SELECT user_id, event_type, value,
-         epoch_us(ts) AS ts_us,
-         CAST(json_extract_string(props, '$.k') AS INTEGER) AS k,
-         (epoch_us(ts) - LAG(epoch_us(ts)) OVER
-            (PARTITION BY user_id ORDER BY ts, event_id)) / 1e6 AS interval_s,
-         COUNT(*) OVER (PARTITION BY user_id, event_type) AS type_count
-  FROM events),
-vec AS (
-  SELECT user_id,
-         COUNT(*) AS request_total,
-         COUNT(CASE WHEN event_type = 'view' THEN 1 END) AS view_total,
-         COUNT(CASE WHEN event_type = 'click' THEN 1 END) AS click_total,
-         COUNT(CASE WHEN event_type = 'signup' THEN 1 END) AS signup_total,
-         COUNT(CASE WHEN event_type = 'purchase' THEN 1 END) AS purchase_total,
-         COUNT(CASE WHEN event_type = 'error' THEN 1 END) AS error_total,
-         COUNT(CASE WHEN event_type = 'error' AND k >= 50 THEN 1 END) AS err5_total,
-         COUNT(DISTINCT event_type) AS unique_type_total,
-         COUNT(DISTINCT k) AS unique_k_total,
-         COUNT(DISTINCT FLOOR(value)) AS unique_val_total,
-         AVG(k) AS depth_avg_raw,
-         VAR_SAMP(k) AS depth_var_raw,
-         AVG(value * 0.001) AS payload_avg_raw,
-         AVG(LN(GREATEST(value, 0.0) + 1.0)) AS payload_log_avg_raw,
-         AVG(interval_s) AS interval_avg_raw,
-         VAR_SAMP(interval_s) AS interval_var_raw,
-         MAX(type_count) AS top_type_total,
-         MIN(ts_us) AS first_us,
-         MAX(ts_us) AS last_us
-  FROM pre GROUP BY user_id)
-SELECT user_id, request_total, view_total, click_total, signup_total,
-       purchase_total, error_total, err5_total,
-       unique_type_total, unique_k_total, unique_val_total, top_type_total,
-       CAST(ROUND((last_us - first_us) / 1e6 / 60.0, 4) AS REAL) AS minutes_total,
-       CAST(ROUND(CASE WHEN (last_us - first_us) / 1e6 / 60.0 <> 0.0
-                  THEN request_total / ((last_us - first_us) / 1e6 / 60.0)
-                  ELSE 1.0 END, 4) AS REAL) AS request_rate,
-       CAST(ROUND(CASE WHEN click_total > 0
-                  THEN view_total::DOUBLE / click_total
-                  ELSE view_total / 0.01 END, 4) AS REAL) AS view_to_click_ratio,
-       CAST(ROUND(CASE WHEN click_total > 0
-                  THEN purchase_total::DOUBLE / click_total
-                  ELSE purchase_total / 0.01 END, 4) AS REAL) AS purchase_to_click_ratio,
-       CAST(ROUND(CASE WHEN click_total > 0
-                  THEN signup_total::DOUBLE / click_total
-                  ELSE signup_total / 0.01 END, 4) AS REAL) AS signup_to_click_ratio,
-       CAST(ROUND(CASE WHEN (last_us - first_us) / 1e6 / 60.0 <> 0.0
-                  THEN error_total / ((last_us - first_us) / 1e6 / 60.0)
-                  ELSE 0.0 END, 4) AS REAL) AS error_rate,
-       CAST(ROUND(CASE WHEN (last_us - first_us) / 1e6 / 60.0 <> 0.0
-                  THEN err5_total / ((last_us - first_us) / 1e6 / 60.0)
-                  ELSE 0.0 END, 4) AS REAL) AS err5_rate,
-       CAST(ROUND(error_total::DOUBLE / request_total, 4) AS REAL) AS error_to_request_ratio,
-       CAST(ROUND(err5_total::DOUBLE / request_total, 4) AS REAL) AS err5_to_request_ratio,
-       CAST(ROUND(top_type_total::DOUBLE / request_total, 4) AS REAL) AS top_type_to_request_ratio,
-       CAST(ROUND(CASE WHEN (last_us - first_us) / 1e6 / 60.0 <> 0.0
-                  THEN unique_type_total / ((last_us - first_us) / 1e6 / 60.0)
-                  ELSE 0.0 END, 4) AS REAL) AS unique_type_rate,
-       CAST(ROUND(unique_type_total::DOUBLE / request_total, 4) AS REAL) AS unique_type_to_request_ratio,
-       CAST(ROUND(CASE WHEN (last_us - first_us) / 1e6 / 60.0 <> 0.0
-                  THEN unique_k_total / ((last_us - first_us) / 1e6 / 60.0)
-                  ELSE 0.0 END, 4) AS REAL) AS unique_k_rate,
-       CAST(ROUND(unique_k_total::DOUBLE / request_total, 4) AS REAL) AS unique_k_to_request_ratio,
-       CAST(ROUND(CASE WHEN (last_us - first_us) / 1e6 / 60.0 <> 0.0
-                  THEN unique_val_total / ((last_us - first_us) / 1e6 / 60.0)
-                  ELSE 0.0 END, 4) AS REAL) AS unique_val_rate,
-       CAST(ROUND(CASE WHEN unique_k_total > 0
-                  THEN unique_val_total::DOUBLE / unique_k_total
-                  ELSE unique_val_total / 0.01 END, 4) AS REAL) AS unique_val_to_unique_k_ratio,
-       CAST(ROUND(depth_avg_raw, 4) AS REAL) AS depth_avg,
-       CAST(ROUND(depth_var_raw, 4) AS REAL) AS depth_var,
-       CAST(ROUND(payload_avg_raw, 4) AS REAL) AS payload_avg,
-       CAST(ROUND(payload_log_avg_raw, 4) AS REAL) AS payload_log_avg,
-       CAST(ROUND(interval_avg_raw, 4) AS REAL) AS interval_avg,
-       CAST(ROUND(interval_var_raw, 4) AS REAL) AS interval_var
-FROM vec
-"""
-
-
-# ---------------------------------------------------------------------------
-# Q58 — updateable-feature merge algebra (cache refresh:
-#       updateable_features.py:13-149, helpers.py:13-52, driven from
-#       base_spark.py:803-867; SURVEY §2.9 udf_update_features row)
-# ---------------------------------------------------------------------------
-
-def q58_feature_update(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Past/current vectors from a deterministic split of events (past =
-    odd event_ids of users not divisible by 7, so some users exercise the
-    no-cache passthrough; current = even event_ids), merged with every
-    updater type: total, maximum, minimum, replace, rate, ratio,
-    count-weighted mean, and the reference's variance pool — VERBATIM,
-    including its squaring of the stored variance (helpers.py:17-23 ==
-    UpdaterVariance:116-149; see functions/features.py). One equi-join on
-    the group key; both sides arrive hash-partitioned by it from their
-    groupBys."""
-    from baskerville_spark.gates.features import (
-        UpdateSpec,
-        update_feature_vector,
-    )
-
-    e = _t(spark, sf_dir, "events")
-
-    def half_vector(cond) -> DataFrame:
-        ts_us = F.unix_micros(F.col("ts").cast("timestamp"))
-        return e.where(cond).groupBy("user_id").agg(
-            F.count(F.lit(1)).alias("request_total"),
-            F.count(F.when(F.col("event_type") == "error", 1)).alias(
-                "error_total"
-            ),
-            ((F.max(ts_us) - F.min(ts_us)) / F.lit(1e6) / F.lit(60.0)).alias(
-                "minutes_total"
-            ),
-            F.avg("value").alias("mean_value"),
-            F.var_samp("value").alias("var_value"),
-            F.max("value").alias("max_value"),
-            F.min("value").alias("min_value"),
-        )
-
-    current = half_vector(F.col("event_id") % 2 == 0)
-    past = half_vector(
-        (F.col("event_id") % 2 == 1) & (F.col("user_id") % 7 != 0)
-    )
-    specs = [
-        UpdateSpec("upd_request_total", "total", ("request_total",)),
-        UpdateSpec("upd_max_value", "maximum", ("max_value",)),
-        UpdateSpec("upd_min_value", "minimum", ("min_value",)),
-        UpdateSpec("upd_minutes_total", "replace", ("minutes_total",)),
-        UpdateSpec(
-            "upd_request_rate", "rate", ("request_total", "minutes_total")
-        ),
-        UpdateSpec(
-            "upd_error_ratio", "ratio", ("error_total", "request_total")
-        ),
-        UpdateSpec("upd_mean_value", "mean", ("mean_value", "request_total")),
-        UpdateSpec(
-            "upd_var_value",
-            "variance",
-            ("var_value", "request_total", "mean_value"),
-        ),
-    ]
-    # The pooled MEAN is emitted as the pooled SUM (mean x merged count):
-    # 2-dp source data parks pooled means exactly on 4-dp rounding-tie
-    # boundaries where ulp-differing engine doubles legitimately round
-    # apart (the q62 lesson), while the scaled form lands on the 2-dp
-    # grid, 5e-5 from any boundary. The mean updater itself is still what
-    # computes it (raw, scaled afterwards).
-    m = update_feature_vector(current, past, ["user_id"], specs)
-    return m.select(
-        "user_id",
-        *[
-            F.round(F.col(c), 4).alias(c)
-            for c in (
-                "upd_request_total",
-                "upd_max_value",
-                "upd_min_value",
-                "upd_minutes_total",
-                "upd_request_rate",
-                "upd_error_ratio",
-            )
-        ],
-        F.round(
-            F.col("upd_mean_value") * F.col("upd_request_total"), 4
-        ).alias("upd_value_sum"),
-        F.round(F.col("upd_var_value"), 4).alias("upd_var_value"),
-    )
-
-
-_Q58_SQL = """
-WITH cur AS (
-  SELECT user_id,
-         COUNT(*)::DOUBLE AS request_total,
-         COUNT(CASE WHEN event_type = 'error' THEN 1 END)::DOUBLE AS error_total,
-         (MAX(epoch_us(ts)) - MIN(epoch_us(ts))) / 1e6 / 60.0 AS minutes_total,
-         AVG(value) AS mean_value,
-         VAR_SAMP(value) AS var_value,
-         MAX(value) AS max_value,
-         MIN(value) AS min_value
-  FROM events WHERE event_id % 2 = 0 GROUP BY user_id),
-pst AS (
-  SELECT user_id,
-         COUNT(*)::DOUBLE AS request_total,
-         COUNT(CASE WHEN event_type = 'error' THEN 1 END)::DOUBLE AS error_total,
-         (MAX(epoch_us(ts)) - MIN(epoch_us(ts))) / 1e6 / 60.0 AS minutes_total,
-         AVG(value) AS mean_value,
-         VAR_SAMP(value) AS var_value,
-         MAX(value) AS max_value,
-         MIN(value) AS min_value
-  FROM events WHERE event_id % 2 = 1 AND user_id % 7 <> 0 GROUP BY user_id)
-SELECT c.user_id,
-       ROUND(CASE WHEN p.user_id IS NULL THEN c.request_total
-                  ELSE p.request_total + c.request_total END, 4)
-         AS upd_request_total,
-       ROUND(CASE WHEN p.user_id IS NULL THEN c.max_value
-                  ELSE GREATEST(p.max_value, c.max_value) END, 4)
-         AS upd_max_value,
-       ROUND(CASE WHEN p.user_id IS NULL THEN c.min_value
-                  ELSE LEAST(p.min_value, c.min_value) END, 4)
-         AS upd_min_value,
-       ROUND(c.minutes_total, 4) AS upd_minutes_total,
-       ROUND(CASE WHEN p.user_id IS NULL THEN c.request_total
-                  WHEN c.minutes_total > 0
-                    THEN (p.request_total + c.request_total) / c.minutes_total
-                  ELSE c.request_total END, 4) AS upd_request_rate,
-       ROUND(CASE WHEN p.user_id IS NULL THEN c.error_total
-                  WHEN (p.request_total + c.request_total) > 0
-                    THEN (p.error_total + c.error_total)
-                         / (p.request_total + c.request_total)
-                  ELSE (p.error_total + c.error_total) / 0.01 END, 4)
-         AS upd_error_ratio,
-       ROUND((CASE WHEN p.user_id IS NULL THEN c.mean_value
-                   ELSE (p.request_total * p.mean_value
-                         + c.request_total * c.mean_value)
-                        / (p.request_total + c.request_total) END)
-             * (CASE WHEN p.user_id IS NULL THEN c.request_total
-                     ELSE p.request_total + c.request_total END), 4)
-         AS upd_value_sum,
-       ROUND(CASE WHEN p.user_id IS NULL THEN c.var_value
-                  ELSE ((p.request_total - 1) * POWER(p.var_value, 2)
-                        + (c.request_total - 1) * POWER(c.var_value, 2)
-                        + p.request_total * POWER(p.mean_value -
-                            (p.request_total * p.var_value
-                             + c.request_total * c.var_value)
-                            / (p.request_total + c.request_total), 2)
-                        + c.request_total * POWER(c.mean_value -
-                            (p.request_total * p.var_value
-                             + c.request_total * c.var_value)
-                            / (p.request_total + c.request_total), 2))
-                       / (p.request_total + c.request_total - 1) END, 4)
-         AS upd_var_value
-FROM cur c LEFT JOIN pst p ON c.user_id = p.user_id
-"""
-
-
-# ---------------------------------------------------------------------------
-# Q59 — incident-aware anomaly thresholding (classify_anomalies,
-#       tasks.py:1771-1795; dual thresholds config.py:273-274)
-# ---------------------------------------------------------------------------
-
-def q59_anomaly_thresholds(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The reference's dual-threshold classification: keys under incident
-    are judged at 0.35, everything else at 0.45 (config.py:273-274). The
-    score here is a closed-form per-user anomaly proxy (2x error ratio —
-    SQL-reproducible; the model-scored path is q55's subject) and the
-    incident set is the users whose error ratio exceeds 0.21 (the
-    incident detector itself is q10/q44's subject). The reference builds
-    an isin() literal from a driver-collected host list; this rides a
-    broadcast left join instead — same verdicts, no driver round-trip
-    (ml/classify.py)."""
-    from baskerville_spark.gates.classify import classify_anomalies
-
-    e = _t(spark, sf_dir, "events")
-    ratio = (
-        F.count(F.when(F.col("event_type") == "error", 1)).cast("double")
-        / F.count(F.lit(1)).cast("double")
-    )
-    scored = e.groupBy("user_id").agg((ratio * 2.0).alias("score"))
-    incidents = scored.where(F.col("score") / 2.0 > 0.21).select("user_id")
-    out = classify_anomalies(scored, incidents, "user_id")
-    return out.select(
-        "user_id",
-        F.round("score", 4).alias("score"),
-        "attack_prediction",
-        "prediction",
-    )
-
-
-_Q59_SQL = """
-WITH scored AS (
-  SELECT user_id,
-         2.0 * (COUNT(CASE WHEN event_type = 'error' THEN 1 END)::DOUBLE
-                / COUNT(*)::DOUBLE) AS score
-  FROM events GROUP BY user_id)
-SELECT user_id,
-       ROUND(score, 4) AS score,
-       CAST(CASE WHEN score / 2.0 > 0.21 THEN 1 ELSE 0 END AS INTEGER)
-         AS attack_prediction,
-       CAST(CASE WHEN score > (CASE WHEN score / 2.0 > 0.21
-                                    THEN 0.35 ELSE 0.45 END)
-                 THEN 1 ELSE 0 END AS INTEGER) AS prediction
-FROM scored
 """
 
 
@@ -1250,80 +712,6 @@ FROM flags GROUP BY part_id
 
 
 # --------------------------------------------------------------------------
-# q78: domain-mixture rebalancing sample
-# --------------------------------------------------------------------------
-
-_MIX_WEIGHTS = {"src0": 0.4, "src1": 0.25, "src2": 0.2, "src3": 0.1, "src4": 0.05}
-
-
-def q78_mixture_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Pretraining domain rebalancing: downsample `documents` to the target
-    source mixture (40/25/20/10/5) without upsampling — T = min_g n_g/w_g,
-    per-group deterministic md5-threshold keep (functions/sampling.py).
-    ONE tiny group-count shuffle + a map-side filter; the oracle recomputes
-    the group counts, the same IEEE-double rates, and the same 60-bit md5
-    bucket, so the exact sampled row SET is under the hash."""
-    from baskerville_spark.gates.sampling import mixture_sample
-
-    d = _t(spark, sf_dir, "documents").select("doc_id", "source")
-    return mixture_sample(d, _MIX_WEIGHTS)
-
-
-def _q78_sql() -> str:
-    vals = ", ".join(
-        f"('{g}', CAST({w} AS DOUBLE))" for g, w in sorted(_MIX_WEIGHTS.items())
-    )
-    return f"""
-WITH w(source, w) AS (VALUES {vals}),
-n AS (SELECT source, COUNT(*) AS n FROM documents GROUP BY source),
-t AS (SELECT MIN(n.n / w.w) AS total FROM n JOIN w USING (source)),
-thr AS (
-  SELECT n.source,
-         CAST(floor(((w.w * t.total) / n.n) * 1000000) AS BIGINT) + 1 AS thr
-  FROM n JOIN w USING (source), t)
-SELECT d.doc_id, d.source
-FROM documents d JOIN thr USING (source)
-WHERE ('0x' || substr(md5(CAST(d.doc_id AS VARCHAR)), 1, 15))::BIGINT % 1000000
-      < thr.thr
-"""
-
-
-# --------------------------------------------------------------------------
-# q81: robust (median/MAD) outlier flagging
-# --------------------------------------------------------------------------
-
-
-def q81_robust_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-event-type robust z-score outliers on events.value:
-    |x − median| > 5 · 1.4826 · MAD. Exact percentile at gate scale
-    (DuckDB quantile_cont parity); the threshold's float expression is
-    written in the SAME op order in both engines so the strict inequality
-    bites identically (checks/stats.robust_outlier_violations)."""
-    from baskerville_spark.gates.stats import robust_outlier_violations
-
-    e = _t(spark, sf_dir, "events").select("event_id", "event_type", "value")
-    return robust_outlier_violations(
-        e, "value", part_col="event_type", id_cols=["event_id"]
-    )
-
-
-_Q81_SQL = """
-WITH m AS (
-  SELECT event_type, quantile_cont(CAST(value AS DOUBLE), 0.5) AS med
-  FROM events WHERE value IS NOT NULL GROUP BY 1),
-d AS (
-  SELECT e.event_type, e.event_id, CAST(e.value AS DOUBLE) AS x, m.med
-  FROM events e JOIN m USING (event_type) WHERE e.value IS NOT NULL),
-md AS (
-  SELECT event_type, quantile_cont(abs(x - med), 0.5) AS mad FROM d GROUP BY 1)
-SELECT d.event_type, d.event_id, d.x AS value,
-       ROUND(d.med, 6) AS med, ROUND(md.mad, 6) AS mad
-FROM d JOIN md USING (event_type)
-WHERE abs(d.x - d.med) > 5.0 * 1.4826 * greatest(md.mad, 1e-12)
-"""
-
-
-# --------------------------------------------------------------------------
 # q94: snapshot content diff — which partitions changed between snapshots
 # --------------------------------------------------------------------------
 
@@ -1466,159 +854,6 @@ def _q95_sql() -> str:
 
 
 # --------------------------------------------------------------------------
-# q96: window-over-window rolling PSI (drift vs the stream's own recent
-# past — no blessed baseline required)
-# --------------------------------------------------------------------------
-
-
-def q96_rolling_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Rolling-drift gate: day-of-month windows over the events table,
-    each day's value distribution PSI'd against the previous day. One scan
-    + one narrow shuffle (per-day conditional-sum buckets), then a
-    |days|-row self-join. The oracle restates the clamped PSI arithmetic
-    in SQL from the same literal edges (q44's proven recipe, but with BOTH
-    sides of the comparison data-derived)."""
-    from baskerville_spark.gates.drift import rolling_psi_verdicts
-
-    e = _t(spark, sf_dir, "events").withColumn(
-        "ts", F.col("ts").cast("timestamp")
-    )
-    v = rolling_psi_verdicts(
-        e, F.dayofmonth(F.col("ts")), "value", DRIFT_VALUE_EDGES
-    )
-    return v.select(
-        "window_id",
-        "prev_window_id",
-        "n_rows",
-        F.round("psi", 6).alias("psi"),
-        F.col("passed").cast("int").alias("passed"),
-    )
-
-
-def _rolling_day_counts_cte(
-    window_expr: str = "CAST(EXTRACT(day FROM ts) AS INT)",
-) -> tuple[str, int]:
-    """The per-day bucket-count CTE shared by the q96/q97/q104 oracles —
-    ONE builder so they can never bin differently from each other (or
-    from the _rolling_pairs aggregate they mirror; q62/q64's shared-fixture
-    rule applied to SQL). ``window_expr``: day-of-month for the batch
-    gates, epoch-day for the streaming gate (month-boundary-safe)."""
-    inner = DRIFT_VALUE_EDGES[1:-1]
-    nb = len(inner) + 1
-    vbucket = " + ".join(
-        f"(CASE WHEN value >= {repr(e)} THEN 1 ELSE 0 END)" for e in inner
-    )
-    sums = ",\n    ".join(
-        f"SUM(CASE WHEN value IS NOT NULL AND ({vbucket}) = {i} THEN 1 ELSE 0 END) AS b{i}"
-        for i in range(nb)
-    )
-    cte = f"""
-WITH c AS (
-  SELECT {window_expr} AS window_id,
-    {sums},
-    COUNT(value) AS n
-  FROM events GROUP BY 1)"""
-    return cte, nb
-
-
-def _q96_sql(window_expr: str = "CAST(EXTRACT(day FROM ts) AS INT)") -> str:
-    from baskerville_spark.checks.drift import EPS, PSI_THRESHOLD
-
-    cte, nb = _rolling_day_counts_cte(window_expr)
-
-    def frac(side: str, i: int) -> str:
-        return f"GREATEST({side}.b{i} * 1.0 / GREATEST({side}.n, 1), {repr(EPS)})"
-
-    terms = " + ".join(
-        f"(({frac('cur', i)}) - ({frac('prv', i)}))"
-        f" * LN(({frac('cur', i)}) / ({frac('prv', i)}))"
-        for i in range(nb)
-    )
-    return f"""{cte}
-SELECT cur.window_id AS window_id,
-       prv.window_id AS prev_window_id,
-       CAST(cur.n AS BIGINT) AS n_rows,
-       ROUND({terms}, 6) AS psi,
-       CASE WHEN ({terms}) <= {PSI_THRESHOLD} THEN 1 ELSE 0 END AS passed
-FROM c cur JOIN c prv ON cur.window_id = prv.window_id + 1
-"""
-
-
-# --------------------------------------------------------------------------
-# q97: window-over-window rolling binned KS (PSI's companion)
-# --------------------------------------------------------------------------
-
-
-def q97_rolling_ks(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Rolling-KS gate: the q96 day-over-day windows, graded with the
-    binned two-sample KS statistic instead of PSI (max |CDF_w − CDF_{w−1}|
-    over bucket prefix sums; catches bulk CDF shifts PSI's EPS clamping
-    mutes). Same one-aggregate + |days|-row self-join plan."""
-    from baskerville_spark.gates.drift import rolling_ks_verdicts
-
-    e = _t(spark, sf_dir, "events").withColumn(
-        "ts", F.col("ts").cast("timestamp")
-    )
-    v = rolling_ks_verdicts(
-        e, F.dayofmonth(F.col("ts")), "value", DRIFT_VALUE_EDGES
-    )
-    return v.select(
-        "window_id",
-        "prev_window_id",
-        "n_rows",
-        F.round("ks", 6).alias("ks"),
-        F.col("passed").cast("int").alias("passed"),
-    )
-
-
-def _q97_sql() -> str:
-    from baskerville_spark.checks.drift import KS_THRESHOLD
-
-    cte, nb = _rolling_day_counts_cte()
-
-    def cdf(side: str, i: int) -> str:
-        return " + ".join(
-            f"{side}.b{j} * 1.0 / GREATEST({side}.n, 1)" for j in range(i)
-        )
-
-    diffs = ", ".join(
-        f"ABS(({cdf('cur', i)}) - ({cdf('prv', i)}))" for i in range(1, nb + 1)
-    )
-    ks = f"GREATEST({diffs})"
-    return f"""{cte}
-SELECT cur.window_id AS window_id,
-       prv.window_id AS prev_window_id,
-       CAST(cur.n AS BIGINT) AS n_rows,
-       ROUND({ks}, 6) AS ks,
-       CASE WHEN ({ks}) <= {KS_THRESHOLD} THEN 1 ELSE 0 END AS passed
-FROM c cur JOIN c prv ON cur.window_id = prv.window_id + 1
-"""
-
-
-def q100_corpus_split(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Split gate: the full (doc_id -> train/val/test) assignment is under
-    the hash — deterministic md5-bucket thresholds (80/10/10), disjoint
-    and exhaustive by construction, reproducible across engines and
-    repartitionings (the leak-proofness property seedful randomSplit lacks)."""
-    from baskerville_spark.gates.sampling import train_val_test_split
-
-    d = _t(spark, sf_dir, "documents")
-    return d.select("doc_id", train_val_test_split())
-
-
-_Q100_SQL = """
-SELECT doc_id,
-       CASE WHEN b < 800 THEN 'train'
-            WHEN b < 900 THEN 'val'
-            ELSE 'test' END AS split
-FROM (
-  SELECT doc_id,
-         ('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 15))::BIGINT % 1000 AS b
-  FROM documents)
-"""
-
-
-# --------------------------------------------------------------------------
 # q101/q102: data-layout operators — min/max file skipping, z-order values
 # --------------------------------------------------------------------------
 
@@ -1754,62 +989,6 @@ SELECT partition, file_id, CAST(bytes AS BIGINT) AS bytes, is_small,
             THEN CAST(before_b // 40000 AS BIGINT) END AS compaction_group
 FROM p
 """
-
-
-# --------------------------------------------------------------------------
-# q104: STREAMING rolling PSI — the q96 monitor as a live stream
-# --------------------------------------------------------------------------
-
-
-def q104_streaming_rolling_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming form of the q96 rolling-drift monitor: the events table
-    streams through a watermarked 1-day tumbling-window aggregate whose
-    exprs are the SAME rolling_bucket_aggs the batch path uses
-    (conditional sums compose under micro-batch partial aggregation), then
-    the day-over-day pairing + clamped PSI run on the (tiny) materialized
-    counts. Windows key on EPOCH DAY (datediff from 1970-01-01), not
-    day-of-month — tumbling windows are true calendar days, so a fixture
-    spanning a month boundary must not alias Jan 5 onto Feb 5. The oracle
-    is the q96 arithmetic over the same epoch-day windows — streaming
-    incrementality cannot change the numbers."""
-    from baskerville_spark.checks.drift import PSI_THRESHOLD, _clamped_psi
-    from baskerville_spark.gates.drift import pair_window_counts, rolling_bucket_aggs
-
-    e_schema = _t(spark, sf_dir, "events").schema
-    stream = (
-        spark.readStream.schema(e_schema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir)
-        .withColumn("ts", F.col("ts").cast("timestamp"))
-        .withWatermark("ts", "1 day")
-        .groupBy(F.window("ts", "1 day"))
-        .agg(*rolling_bucket_aggs("value", DRIFT_VALUE_EDGES))
-    )
-    sink = _drain_to_memory(spark, stream, "complete", "q104")
-    counts = sink.select(
-        F.datediff(F.col("window.start"), F.lit("1970-01-01"))
-        .cast("int")
-        .alias("window_id"),
-        *[c for c in sink.columns if c != "window"],
-    )
-    j, cur_fracs, prv_fracs = pair_window_counts(
-        counts, len(DRIFT_VALUE_EDGES) - 1
-    )
-    psi = _clamped_psi(cur_fracs, prv_fracs)
-    return j.select(
-        F.col("cur_window_id").alias("window_id"),
-        F.col("prv_window_id").alias("prev_window_id"),
-        F.col("cur_n").cast("long").alias("n_rows"),
-        F.round(psi, 6).alias("psi"),
-        (psi <= F.lit(float(PSI_THRESHOLD))).cast("int").alias("passed"),
-    )
-
-
-def _q104_sql() -> str:
-    return _q96_sql(
-        window_expr="CAST(date_diff('day', DATE '1970-01-01',"
-        " CAST(ts AS DATE)) AS INT)"
-    )
 
 
 # --------------------------------------------------------------------------
@@ -2173,549 +1352,6 @@ FROM scoped WHERE part = 2 AND event_id % 13 = 1
 
 
 # --------------------------------------------------------------------------
-# q127: PSI drift attribution — the drill-down behind a q44 psi:<col>
-# alarm. PSI is a sum of non-negative per-bin terms, so the terms are an
-# exact additive attribution ("which bins moved, what share of the alarm
-# each carries"). Same ONE-scan/ONE-shuffle wide aggregate as q44; rows
-# explode from the wide result. The reference reports only the aggregate
-# anomaly score (incident_detector.py:285-289) — it cannot say WHY.
-# --------------------------------------------------------------------------
-
-
-def q127_psi_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from baskerville_spark.gates.drift import psi_attribution
-
-    a = psi_attribution(*_drift_fixture(spark, sf_dir))
-    return a.select(
-        "part_id",
-        "check_name",
-        "bin_idx",
-        F.round("cur_frac", 6).alias("cur_frac"),
-        F.round("base_frac", 6).alias("base_frac"),
-        F.round("contribution", 6).alias("contribution"),
-        F.round("share", 6).alias("share"),
-    )
-
-
-def _q127_sql() -> str:
-    """Per-bin PSI terms restated in SQL from the same literals — identical
-    clamp, identical left-assoc term sum, identical EPS total guard."""
-    from baskerville_spark.checks.drift import EPS
-
-    def term(pfx: str, i: int, n: str, base: list[float]) -> str:
-        p = f"GREATEST({_drift_frac(pfx, i, n)}, {repr(EPS)})"
-        q = repr(max(base[i], EPS))
-        return f"((({p}) - {q}) * LN(({p}) / {q}))"
-
-    blocks = []
-    for col, pfx, n, base in _DRIFT_COLS:
-        nb = len(base)
-        total = "GREATEST(" + " + ".join(
-            term(pfx, i, n, base) for i in range(nb)
-        ) + f", {repr(EPS)})"
-        for i in range(nb):
-            t = term(pfx, i, n, base)
-            blocks.append(f"""
-SELECT part_id, 'psi:{col}' AS check_name, CAST({i} AS INT) AS bin_idx,
-       ROUND({_drift_frac(pfx, i, n)}, 6) AS cur_frac,
-       CAST({repr(float(base[i]))} AS DOUBLE) AS base_frac,
-       ROUND({t}, 6) AS contribution,
-       ROUND(({t}) / ({total}), 6) AS share
-FROM agg""")
-    union = "\nUNION ALL\n".join(blocks)
-    return f"{_drift_agg_sql()}\n{union}\n"
-
-
-# --------------------------------------------------------------------------
-# q128: metrics-history anomaly detection (checks/history.py) — the
-# run-over-run regression detector. The reference's incident rule
-# (incident_detector.py:251-295, trailing AVG/STDDEV window per target)
-# applied to the validation engine's OWN metric series: catches a run whose
-# metrics silently break from their history while passing every absolute
-# threshold. Fixture: an 8-run history synthesized from ONE scan of
-# documents (run_id = doc_id % 8, part_id = (doc_id // 8) % 2; per-run
-# row-count and mean-chars metrics carry a steady 0.1%/0.05% per-run ramp —
-# provably inside the 3-sigma band for any arithmetic ramp — and run 7's
-# row_count is multiplied 3x, the planted regression). The oracle restates
-# the full trailing-window algebra in SQL: identical frame
-# (UNBOUNDED PRECEDING .. 1 PRECEDING — the current value never
-# contaminates its own baseline), identical k-sigma + rel-change rules,
-# identical NULL semantics on warm-up rows (FALSE AND NULL = FALSE).
-# --------------------------------------------------------------------------
-
-def q128_metric_anomalies(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from baskerville_spark.gates.history import detect_metric_anomalies
-
-    d = _t(spark, sf_dir, "documents")
-    agg = d.groupBy(
-        (F.col("doc_id") % 8).cast("long").alias("run_id"),
-        (F.floor(F.col("doc_id") / 8) % 2).cast("int").alias("part_id"),
-    ).agg(
-        F.count(F.lit(1)).alias("n_rows"),
-        F.avg("n_chars").alias("mean_chars"),
-    )
-    ramp_count = F.when(F.col("run_id") == 7, F.lit(3.0)).otherwise(
-        F.lit(1.0) + F.col("run_id") * F.lit(0.001)
-    )
-    ramp_mean = F.lit(1.0) + F.col("run_id") * F.lit(0.0005)
-    hist = agg.select(
-        "run_id",
-        "part_id",
-        F.lit("*").alias("column_name"),
-        F.lit("row_count").alias("metric_name"),
-        (F.col("n_rows") * ramp_count).alias("metric_value"),
-    ).unionByName(
-        agg.select(
-            "run_id",
-            "part_id",
-            F.lit("n_chars").alias("column_name"),
-            F.lit("mean_chars").alias("metric_name"),
-            (F.col("mean_chars") * ramp_mean).alias("metric_value"),
-        )
-    )
-    rep = detect_metric_anomalies(hist)
-    return rep.select(
-        "run_id",
-        "part_id",
-        "column_name",
-        "metric_name",
-        F.round("metric_value", 6).alias("metric_value"),
-        "trailing_n",
-        F.round("trailing_mean", 6).alias("trailing_mean"),
-        F.round("trailing_stddev", 6).alias("trailing_stddev"),
-        "anomaly",
-    )
-
-
-_Q128_SQL = """
-WITH base AS (
-  SELECT CAST(doc_id % 8 AS BIGINT) AS run_id,
-         CAST((doc_id // 8) % 2 AS INT) AS part_id,
-         n_chars
-  FROM documents),
-agg AS (
-  SELECT run_id, part_id,
-         COUNT(*) AS n_rows,
-         AVG(n_chars) AS mean_chars
-  FROM base GROUP BY run_id, part_id),
-hist AS (
-  SELECT run_id, part_id, '*' AS column_name, 'row_count' AS metric_name,
-         n_rows * (CASE WHEN run_id = 7 THEN 3.0
-                        ELSE 1.0 + run_id * 0.001 END) AS metric_value
-  FROM agg
-  UNION ALL
-  SELECT run_id, part_id, 'n_chars' AS column_name,
-         'mean_chars' AS metric_name,
-         mean_chars * (1.0 + run_id * 0.0005) AS metric_value
-  FROM agg),
-det AS (
-  SELECT *,
-         COUNT(metric_value) OVER w AS trailing_n,
-         AVG(metric_value) OVER w AS trailing_mean,
-         COALESCE(STDDEV_SAMP(metric_value) OVER w, 0.0) AS trailing_stddev
-  FROM hist
-  WINDOW w AS (PARTITION BY part_id, column_name, metric_name ORDER BY run_id
-               ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING))
-SELECT run_id, part_id, column_name, metric_name,
-       ROUND(metric_value, 6) AS metric_value,
-       CAST(trailing_n AS BIGINT) AS trailing_n,
-       ROUND(trailing_mean, 6) AS trailing_mean,
-       ROUND(trailing_stddev, 6) AS trailing_stddev,
-       (trailing_n >= 3 AND (
-          ABS(metric_value - trailing_mean)
-            > 3.0 * GREATEST(trailing_stddev, 1e-9)
-          OR ABS(metric_value - trailing_mean)
-            > 0.5 * GREATEST(ABS(trailing_mean), 1e-9)
-       )) AS anomaly
-FROM det
-"""
-
-
-# --------------------------------------------------------------------------
-# q129: constraint suggestion (checks/suggest.py) — the Deequ-style
-# profile->suite loop the reference cannot do (its rules are hard-coded per
-# feature class, src/baskerville/features/feature_*.py). Profiles a derived
-# orders frame (planted 2% NULL tag column with 30 distinct values, so the
-# padded-completeness branch fires and the membership guard REJECTS a
-# 30-value column) in two bounded passes and emits deterministic suggested
-# constraints. The oracle restates every rule data-driven: guarded UNION ALL
-# branches per (column x kind) whose WHERE clauses are the suggestion rules
-# themselves, so a data change that flips a rule flips both engines.
-# --------------------------------------------------------------------------
-
-def q129_suggest_constraints(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from baskerville_spark.gates.suggest import suggest_constraints
-
-    o = _t(spark, sf_dir, "orders")
-    src = o.select(
-        "o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice",
-        "o_orderpriority",
-        F.when(F.col("o_orderkey") % 50 == 0, F.lit(None)).otherwise(
-            F.concat(F.lit("c"), (F.col("o_orderkey") % 30).cast("string"))
-        ).alias("o_tag"),
-    )
-    return suggest_constraints(src)
-
-
-_Q129_COLS = [
-    # (name, numeric, string)
-    ("o_orderkey", True, False),
-    ("o_custkey", True, False),
-    ("o_orderstatus", False, True),
-    ("o_totalprice", True, False),
-    ("o_orderpriority", False, True),
-    ("o_tag", False, True),
-]
-
-_Q129_PROFILE = ",\n".join(
-    f"""    COUNT({c}) AS nn_{c}, COUNT(DISTINCT {c}) AS nd_{c}"""
-    + (f""",
-    CAST(MIN({c}) AS DOUBLE) AS lo_{c},
-    CAST(MAX({c}) AS DOUBLE) AS hi_{c}""" if num else "")
-    for c, num, _ in _Q129_COLS
-)
-
-_Q129_BRANCHES = "\nUNION ALL\n".join(
-    b for c, num, s in _Q129_COLS for b in filter(None, [
-        f"""SELECT '{c}' AS col_name, 'completeness' AS kind,
-       CASE WHEN nn_{c} = n THEN CAST(0.0 AS DOUBLE)
-            ELSE ROUND(CAST(n - nn_{c} AS DOUBLE) / n * 1.25, 6) END
-         AS threshold,
-       CAST(NULL AS DOUBLE) AS lo, CAST(NULL AS DOUBLE) AS hi,
-       CAST(NULL AS VARCHAR) AS members, n AS n_rows
-FROM p WHERE CAST(n - nn_{c} AS DOUBLE) / n <= 0.05""",
-        f"""SELECT '{c}', 'unique', CAST(0.0 AS DOUBLE),
-       CAST(NULL AS DOUBLE), CAST(NULL AS DOUBLE), CAST(NULL AS VARCHAR), n
-FROM p WHERE nn_{c} = n AND nd_{c} = n""",
-        (f"""SELECT '{c}', 'bounds', CAST(0.0 AS DOUBLE),
-       ROUND(lo_{c}, 6), ROUND(hi_{c}, 6), CAST(NULL AS VARCHAR), n
-FROM p WHERE nn_{c} > 0""" if num else None),
-        (f"""SELECT '{c}', 'membership', CAST(0.0 AS DOUBLE),
-       CAST(NULL AS DOUBLE), CAST(NULL AS DOUBLE),
-       (SELECT string_agg(v, ',' ORDER BY v)
-        FROM (SELECT DISTINCT {c} AS v FROM src WHERE {c} IS NOT NULL)), n
-FROM p WHERE nd_{c} BETWEEN 1 AND 20""" if s else None),
-    ])
-)
-
-_Q129_SQL = f"""
-WITH src AS (
-  SELECT o_orderkey, o_custkey, o_orderstatus, o_totalprice, o_orderpriority,
-         CASE WHEN o_orderkey % 50 = 0 THEN NULL
-              ELSE 'c' || CAST(o_orderkey % 30 AS VARCHAR) END AS o_tag
-  FROM orders),
-p AS (
-  SELECT CAST(COUNT(*) AS BIGINT) AS n,
-{_Q129_PROFILE}
-  FROM src)
-{_Q129_BRANCHES}
-"""
-
-
-# --------------------------------------------------------------------------
-# q130: functional-dependency checks (checks/suggest.py). Uniqueness proves
-# a KEY; an FD proves AGREEMENT — "transcript rows sharing a clip_id must
-# agree on codec" is the audio-table shape. Three FDs: a holding one
-# (o_orderkey -> o_orderstatus, key->attribute), a violated single-column
-# one (l_orderkey -> l_returnflag), and a violated COMPOSITE determinant
-# ((l_orderkey, l_linenumber) -> l_partkey). Two-phase plan per FD:
-# map-side-combined dropDuplicates on (det, dep), then count per group —
-# the exchange carries distinct pairs, never raw rows. NULL dependents
-# count as a value (SQL DISTINCT semantics, identical in both engines).
-# --------------------------------------------------------------------------
-
-def q130_functional_deps(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from baskerville_spark.gates.suggest import functional_dependency
-
-    o = _t(spark, sf_dir, "orders")
-    li = _t(spark, sf_dir, "lineitem")
-    return (
-        functional_dependency(o, "orders_key_status",
-                              ["o_orderkey"], "o_orderstatus")
-        .unionByName(functional_dependency(
-            li, "lineitem_order_returnflag",
-            ["l_orderkey"], "l_returnflag"))
-        .unionByName(functional_dependency(
-            li, "lineitem_orderline_partkey",
-            ["l_orderkey", "l_linenumber"], "l_partkey"))
-    )
-
-
-_Q130_SQL = """
-WITH fd1 AS (
-  SELECT CAST(COUNT(*) AS BIGINT) AS n_groups,
-         CAST(SUM(CASE WHEN n_dep > 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_viol
-  FROM (SELECT o_orderkey, COUNT(*) AS n_dep
-        FROM (SELECT DISTINCT o_orderkey, o_orderstatus FROM orders)
-        GROUP BY o_orderkey)),
-fd2 AS (
-  SELECT CAST(COUNT(*) AS BIGINT) AS n_groups,
-         CAST(SUM(CASE WHEN n_dep > 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_viol
-  FROM (SELECT l_orderkey, COUNT(*) AS n_dep
-        FROM (SELECT DISTINCT l_orderkey, l_returnflag FROM lineitem)
-        GROUP BY l_orderkey)),
-fd3 AS (
-  SELECT CAST(COUNT(*) AS BIGINT) AS n_groups,
-         CAST(SUM(CASE WHEN n_dep > 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_viol
-  FROM (SELECT l_orderkey, l_linenumber, COUNT(*) AS n_dep
-        FROM (SELECT DISTINCT l_orderkey, l_linenumber, l_partkey
-              FROM lineitem)
-        GROUP BY l_orderkey, l_linenumber))
-SELECT 'orders_key_status' AS fd_name, n_groups, n_viol AS n_violating,
-       ROUND(CAST(n_viol AS DOUBLE) / GREATEST(n_groups, 1), 6)
-         AS violation_rate,
-       n_viol = 0 AS passed
-FROM fd1
-UNION ALL
-SELECT 'lineitem_order_returnflag', n_groups, n_viol,
-       ROUND(CAST(n_viol AS DOUBLE) / GREATEST(n_groups, 1), 6), n_viol = 0
-FROM fd2
-UNION ALL
-SELECT 'lineitem_orderline_partkey', n_groups, n_viol,
-       ROUND(CAST(n_viol AS DOUBLE) / GREATEST(n_groups, 1), 6), n_viol = 0
-FROM fd3
-"""
-
-
-def q133_mannwhitney(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from baskerville_spark.gates.drift import mannwhitney_u
-
-    li = _t(spark, sf_dir, "lineitem")
-    out = mannwhitney_u(li, "l_returnflag", "l_quantity")
-    return out.select(
-        "l_returnflag", "u2", "n_group", "n_rest",
-        F.round("z", 6).alias("z"),
-    )
-
-
-_Q133_SQL = """
-WITH x AS (
-  SELECT l_returnflag AS g, l_quantity AS v
-  FROM lineitem WHERE l_quantity IS NOT NULL),
-vtot AS (SELECT v, COUNT(*) AS cnt_eq FROM x GROUP BY v),
-vtot2 AS (
-  SELECT v, cnt_eq,
-         COALESCE(SUM(cnt_eq) OVER (ORDER BY v
-           ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS cnt_lt
-  FROM vtot),
-cells AS (SELECT g, v, COUNT(*) AS o FROM x GROUP BY g, v),
-pg AS (
-  SELECT g, SUM(o) AS n_group,
-         SUM(o * (2 * cnt_lt + cnt_eq + 1)) AS two_r
-  FROM cells JOIN vtot2 USING (v) GROUP BY g),
-tot AS (
-  SELECT SUM(cnt_eq) AS n_all,
-         SUM(POWER(CAST(cnt_eq AS DOUBLE), 3) - cnt_eq) AS tie_sum
-  FROM vtot)
-SELECT g AS l_returnflag,
-       CAST(two_r - n_group * (n_group + 1) AS BIGINT) AS u2,
-       CAST(n_group AS BIGINT) AS n_group,
-       CAST(n_all - n_group AS BIGINT) AS n_rest,
-       ROUND(
-         (CAST(two_r - n_group * (n_group + 1) AS DOUBLE)
-          - CAST(n_group AS DOUBLE) * CAST(n_all - n_group AS DOUBLE))
-         / (2.0 * SQRT(
-             CAST(n_group AS DOUBLE) * CAST(n_all - n_group AS DOUBLE) / 12.0
-             * ((n_all + 1)
-                - tie_sum / (CAST(n_all AS DOUBLE) * (n_all - 1))))),
-         6) AS z
-FROM pg CROSS JOIN tot
-"""
-
-
-# --------------------------------------------------------------------------
-# q139: window-over-window rolling chi2 / Cramér's V — completes the
-# rolling family (PSI q96 weights tail moves by log-ratio, KS q97 sees
-# bulk CDF shifts, chi2/V is the calibrated scale-free effect size on the
-# SAME bucket counts, comparable across windows of different sizes).
-# Identical one-aggregate + |days|-row self-join plan; the oracle reuses
-# the one shared day-counts CTE builder (q96/q97/q104's shared-fixture
-# rule) so the three gates can never bin differently, and restates the
-# 2xK contingency algebra with the same zero-cell skip and term order.
-# --------------------------------------------------------------------------
-
-
-def q139_rolling_chi2(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from baskerville_spark.gates.drift import rolling_chi2_verdicts
-
-    e = _t(spark, sf_dir, "events").withColumn(
-        "ts", F.col("ts").cast("timestamp")
-    )
-    v = rolling_chi2_verdicts(
-        e, F.dayofmonth(F.col("ts")), "value", DRIFT_VALUE_EDGES
-    )
-    return v.select(
-        "window_id",
-        "prev_window_id",
-        "n_rows",
-        F.round("cramers_v", 6).alias("cramers_v"),
-        F.col("passed").cast("int").alias("passed"),
-    )
-
-
-def _q139_sql() -> str:
-    cte, nb = _rolling_day_counts_cte()
-    terms = []
-    for i in range(nb):
-        c_i = f"(cur.b{i} + prv.b{i})"
-        e_cur = f"(cur.n * {c_i} / CAST(cur.n + prv.n AS DOUBLE))"
-        e_prv = f"(prv.n * {c_i} / CAST(cur.n + prv.n AS DOUBLE))"
-        terms.append(
-            f"CASE WHEN {c_i} > 0 THEN "
-            f"POWER(cur.b{i} - {e_cur}, 2) / {e_cur} "
-            f"+ POWER(prv.b{i} - {e_prv}, 2) / {e_prv} ELSE 0.0 END"
-        )
-    chi2 = " + ".join(terms)
-    return f"""{cte}
-SELECT cur.window_id AS window_id,
-       prv.window_id AS prev_window_id,
-       CAST(cur.n AS BIGINT) AS n_rows,
-       ROUND(CASE WHEN cur.n > 0 AND prv.n > 0 THEN
-         SQRT(({chi2}) / CAST(cur.n + prv.n AS DOUBLE)) END, 6) AS cramers_v,
-       CAST(CASE WHEN cur.n > 0 AND prv.n > 0 THEN
-         SQRT(({chi2}) / CAST(cur.n + prv.n AS DOUBLE)) END <= 0.2 AS INT)
-         AS passed
-FROM c cur JOIN c prv ON cur.window_id = prv.window_id + 1
-"""
-
-
-# --------------------------------------------------------------------------
-# q140: budget-constrained corpus selection — "the greedy prefix of the
-# corpus, in priority order, up to N tokens" (training-mix composition).
-# Priority here is md5(doc_id) — an unbiased deterministic shuffle both
-# engines spell identically (lowercase hex of the decimal string) — and
-# the running total is the packing.py two-phase distributed prefix sum
-# lifted to a COMPOSITE (priority, id) sort key: per-block totals + max
-# struct bounds collected in ONE job, block membership re-derived from
-# the row's own key (struct comparison), within-block window cumsum.
-# cum_tokens is exact bigint; selected = cum_tokens <= budget. Oracle:
-# one SQL cumulative window over the identical ordering.
-# --------------------------------------------------------------------------
-
-
-def q140_token_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from baskerville_spark.gates.sampling import select_within_token_budget
-
-    docs = _t(spark, sf_dir, "documents")
-    toks = F.size(
-        F.filter(
-            F.split(F.trim(F.lower(F.col("text"))), r"\s+"),
-            lambda t: t != "",
-        )
-    )
-    base = docs.select(
-        "doc_id",
-        toks.cast("long").alias("n_tokens"),
-        F.md5(F.col("doc_id").cast("string").cast("binary")).alias("pri"),
-    )
-    out = select_within_token_budget(
-        base, "doc_id", "n_tokens", budget=20000, priority_col="pri"
-    )
-    return out.select("doc_id", "n_tokens", "cum_tokens", "selected")
-
-
-_Q140_SQL = """
-WITH t AS (
-  SELECT doc_id,
-         CAST(len(list_filter(string_split_regex(trim(lower(text)), '\\s+'),
-                              x -> x <> '')) AS BIGINT) AS n_tokens,
-         md5(CAST(doc_id AS VARCHAR)) AS pri
-  FROM documents)
-SELECT doc_id,
-       n_tokens,
-       CAST(SUM(n_tokens) OVER (ORDER BY pri ASC, doc_id ASC
-         ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT)
-         AS cum_tokens,
-       SUM(n_tokens) OVER (ORDER BY pri ASC, doc_id ASC
-         ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) <= 20000
-         AS selected
-FROM t
-"""
-
-
-# --------------------------------------------------------------------------
-# q142: Wasserstein-1 (earth-mover) drift per event_type over fixed
-# equi-width bins — the integral member of the drift family (PSI q44 =
-# divergence, KS q10 = supremum): a one-bin shift and a ten-bin shift cost
-# PSI/KS the same, W1 charges the transport distance. Sample A = even
-# event_ids, sample B = odd, with a planted +75 shift on B's 'error' rows
-# so exactly that group crosses the threshold. The per-bin CDF difference
-# stays the EXACT integer |cum_a*tot_b - cum_b*tot_a| (decimal(38,0)
-# Spark-side — bigint overflows at 10^12 rows) and only the single final
-# width*num/(tot_a*tot_b) division is float, so Spark's unordered double
-# SUM can never hash-diverge from the oracle's ordered one.
-# --------------------------------------------------------------------------
-
-
-def q142_wasserstein_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from baskerville_spark.gates.drift import wasserstein_binned
-
-    ev = _t(spark, sf_dir, "events").where(F.col("value").isNotNull())
-    side = (F.col("event_id") % 2) == 0
-    shifted = F.col("value") + F.when(
-        (~side) & (F.col("event_type") == "error"), F.lit(75.0)
-    ).otherwise(F.lit(0.0))
-    df = ev.select(
-        "event_type", shifted.alias("v"), side.alias("sa")
-    )
-    return wasserstein_binned(
-        df, "v", F.col("sa"), ["event_type"],
-        lo=0.0, hi=500.0, n_bins=20, threshold=10.0,
-    )
-
-
-_Q142_SQL = """
-WITH x AS (
-  SELECT event_type,
-         CAST(value AS DOUBLE)
-           + CASE WHEN event_id % 2 <> 0 AND event_type = 'error'
-                  THEN 75.0 ELSE 0.0 END AS v,
-         (event_id % 2 = 0) AS sa
-  FROM events WHERE value IS NOT NULL),
-b AS (
-  SELECT event_type,
-         CAST(least(greatest(CAST(floor(v / 25.0) AS BIGINT), 0), 19) AS INT)
-           AS bin,
-         SUM(CASE WHEN sa THEN 1 ELSE 0 END) AS c_a,
-         SUM(CASE WHEN sa THEN 0 ELSE 1 END) AS c_b
-  FROM x GROUP BY 1, 2),
-grid AS (
-  SELECT event_type, bin
-  FROM (SELECT DISTINCT event_type FROM b)
-  CROSS JOIN (SELECT unnest(generate_series(0, 19)) AS bin)),
-f AS (
-  SELECT grid.event_type, grid.bin,
-         COALESCE(c_a, 0) AS c_a, COALESCE(c_b, 0) AS c_b
-  FROM grid LEFT JOIN b USING (event_type, bin)),
-c AS (
-  SELECT event_type, bin,
-         SUM(c_a) OVER w AS cum_a, SUM(c_b) OVER w AS cum_b
-  FROM f WINDOW w AS (PARTITION BY event_type ORDER BY bin
-                      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)),
-c2 AS (
-  SELECT event_type, cum_a, cum_b,
-         MAX(cum_a) OVER (PARTITION BY event_type) AS tot_a,
-         MAX(cum_b) OVER (PARTITION BY event_type) AS tot_b
-  FROM c),
-agg AS (
-  SELECT event_type,
-         SUM(ABS(cum_a * tot_b - cum_b * tot_a)) AS num,
-         MAX(tot_a) AS tot_a, MAX(tot_b) AS tot_b
-  FROM c2 GROUP BY 1)
-SELECT event_type,
-       CAST(tot_a AS BIGINT) AS n_a,
-       CAST(tot_b AS BIGINT) AS n_b,
-       ROUND(25.0 * CAST(num AS DOUBLE)
-             / (CAST(tot_a AS DOUBLE) * CAST(tot_b AS DOUBLE)), 6) AS w1,
-       ROUND(25.0 * CAST(num AS DOUBLE)
-             / (CAST(tot_a AS DOUBLE) * CAST(tot_b AS DOUBLE)), 6) > 10.0
-         AS drift
-FROM agg
-WHERE tot_a > 0 AND tot_b > 0
-"""
-
-
-# --------------------------------------------------------------------------
 # q143: partition-spill integrity — keys physically present in more than
 # one table partition (checks/consistency.partition_spill). Distinct from
 # uniqueness q09/q42: a within-partition duplicate (the generator's
@@ -2837,11 +1473,11 @@ FROM a
 
 _GATES = (
     (validation.q21_clip_validation, fixtures._q21_sql),
-    (q100_corpus_split, _Q100_SQL),
+    (sampling.q100_corpus_split, sampling.Q100_SQL),
     (q101_file_skipping, _Q101_SQL),
     (q102_zorder, _Q102_SQL),
     (q103_compaction_plan, _Q103_SQL),
-    (q104_streaming_rolling_psi, _q104_sql),
+    (drift.q104_streaming_rolling_psi, drift._q104_sql),
     (audio_quality.q105_split_on_silence, audio_quality.Q105_SQL),
     (text.q106_transcript_edit_distance, text.Q106_SQL),
     (audio_quality.q107_concat_roundtrip, audio_quality.Q107_SQL),
@@ -2864,22 +1500,22 @@ _GATES = (
     (q124_schema_evolution, _Q124_SQL),
     (q125_partition_completeness, _Q125_SQL),
     (q126_row_level_diff, _Q126_SQL),
-    (q127_psi_attribution, _q127_sql),
-    (q128_metric_anomalies, _Q128_SQL),
-    (q129_suggest_constraints, _Q129_SQL),
-    (q130_functional_deps, _Q130_SQL),
+    (drift.q127_psi_attribution, drift._q127_sql),
+    (history.q128_metric_anomalies, history.Q128_SQL),
+    (suggest.q129_suggest_constraints, suggest.Q129_SQL),
+    (suggest.q130_functional_deps, suggest.Q130_SQL),
     (audio_quality.q131_dc_offset, audio_quality.Q131_SQL),
     (validation.q132_chi2_mix, validation.Q132_SQL),
-    (q133_mannwhitney, _Q133_SQL),
+    (drift.q133_mannwhitney, drift.Q133_SQL),
     (audio_quality.q134_channel_balance, audio_quality.Q134_SQL),
     (validation.q135_zipf_fit, validation.Q135_SQL),
     (validation.q136_spearman, validation.Q136_SQL),
     (validation.q137_mutual_info, validation.Q137_SQL),
     (validation.q138_benford, validation.Q138_SQL),
-    (q139_rolling_chi2, _q139_sql),
-    (q140_token_budget, _Q140_SQL),
+    (drift.q139_rolling_chi2, drift._q139_sql),
+    (sampling.q140_token_budget, sampling.Q140_SQL),
     (audio_dedup.q141_label_conflicts, audio_dedup.Q141_SQL),
-    (q142_wasserstein_drift, _Q142_SQL),
+    (drift.q142_wasserstein_drift, drift.Q142_SQL),
     (q143_partition_spill, _Q143_SQL),
     (q144_out_of_order, _Q144_SQL),
     # regression canaries: the oldest driver-green gates
@@ -2909,7 +1545,7 @@ _GATES = (
     (web.q25_json_props, web.Q25_SQL),
     (web.q26_rollup_counts, web.Q26_SQL),
     (web.q27_asof_prev_click, web.Q27_SQL),
-    (q28_stratified_sample, _q28_sql),
+    (sampling.q28_stratified_sample, sampling._q28_sql),
     (q29_state_merge, _Q29_SQL),
     (web.q30_cube_counts, web.Q30_SQL),
     (web.q31_heavy_both_types, web.Q31_SQL),
@@ -2918,7 +1554,7 @@ _GATES = (
     (web.q34_map_features, web.Q34_SQL),
     (dedup.q35_simhash_near_dups, dedup._q35_sql),
     (web.q36_session_window, web.Q36_SQL),
-    (q37_geo_localize, _Q37_SQL),
+    (geo.q37_geo_localize, geo.Q37_SQL),
     (similarity.q38_ivf_topk, similarity.Q38_SQL),  # exact top-k on the planted-cluster corpus
     (q39_streaming_dedup, _Q39_SQL),
     (multimodal.q40_image_features, multimodal.Q40_SQL),
@@ -2934,13 +1570,13 @@ _GATES = (
     (validation.q50_pattern_violations, validation.Q50_SQL),
     (dedup.q51_normalized_dups, dedup.Q51_SQL),
     (text.q52_heavy_hitter_tokens, text.Q52_SQL),
-    (q53_standard_scale, _Q53_SQL),
-    (q54_string_index, _Q54_SQL),
-    (q55_iforest_outliers, _Q55_SQL),
-    (q56_gbm_labeler, _Q56_SQL),
-    (q57_feature_vector, _Q57_SQL),
-    (q58_feature_update, _Q58_SQL),
-    (q59_anomaly_thresholds, _Q59_SQL),
+    (features.q53_standard_scale, features.Q53_SQL),
+    (features.q54_string_index, features.Q54_SQL),
+    (iforest.q55_iforest_outliers, iforest.Q55_SQL),
+    (gbm.q56_gbm_labeler, gbm.Q56_SQL),
+    (features.q57_feature_vector, features.Q57_SQL),
+    (features.q58_feature_update, features.Q58_SQL),
+    (classify.q59_anomaly_thresholds, classify.Q59_SQL),
     (web.q60_challenge_commands, web.Q60_SQL),
     # same closed-form grid as q21: resume must reproduce the one-shot run
     (validation.q61_resume_verdicts, fixtures._q21_sql),
@@ -2960,10 +1596,10 @@ _GATES = (
     (q75_speaking_rate, _Q75_SQL),
     (dedup.q76_decontamination, dedup.Q76_SQL),
     (packing.q77_sequence_packing, packing.Q77_SQL),
-    (q78_mixture_sample, _q78_sql),
+    (sampling.q78_mixture_sample, sampling._q78_sql),
     (packing.q79_chunk_documents, packing.Q79_SQL),
     (text.q80_vocab_oov, text.Q80_SQL),
-    (q81_robust_outliers, _Q81_SQL),
+    (stats.q81_robust_outliers, stats.Q81_SQL),
     (audio_dedup.q82_audio_content_dedup, audio_dedup.Q82_SQL),
     (audio_quality.q83_loudness_stats, audio_quality.Q83_SQL),
     (audio_quality.q84_spectral_features, audio_quality.Q84_SQL),
@@ -2978,8 +1614,8 @@ _GATES = (
     (bloom.q93_bloom_semi, bloom.Q93_SQL),
     (q94_snapshot_diff, _Q94_SQL),
     (q95_incremental_revalidation, _q95_sql),
-    (q96_rolling_psi, _q96_sql),
-    (q97_rolling_ks, _q97_sql),
+    (drift.q96_rolling_psi, drift._q96_sql),
+    (drift.q97_rolling_ks, drift._q97_sql),
     (validation.q98_quarantine_routing, validation._q98_sql),
     (dedup.q99_keep_canonical, dedup.Q99_SQL),
 )

@@ -8,7 +8,7 @@ so each fold the SQL oracles mirror exists exactly once.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Row
+from pyspark.sql import Column, DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 
 from baskerville_spark.checks.drift import (
@@ -20,6 +20,15 @@ from baskerville_spark.checks.drift import (
     _prefix_counts,
     _wide_bucket_agg,
     bucket_counts,
+)
+from baskerville_spark.gates.fixtures import (
+    DRIFT_VALUE_EDGES,
+    _DRIFT_COLS,
+    _drain_to_memory,
+    _drift_agg_sql,
+    _drift_fixture,
+    _drift_frac,
+    _t,
 )
 
 CRAMERS_V_THRESHOLD = 0.2
@@ -451,3 +460,406 @@ def wasserstein_binned(
         w1.alias("w1"),
         (w1 > F.lit(threshold)).alias("drift"),
     )
+
+
+# --------------------------------------------------------------------------
+# q96: window-over-window rolling PSI (drift vs the stream's own recent
+# past — no blessed baseline required)
+# --------------------------------------------------------------------------
+
+
+def q96_rolling_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Rolling-drift gate: day-of-month windows over the events table,
+    each day's value distribution PSI'd against the previous day. One scan
+    + one narrow shuffle (per-day conditional-sum buckets), then a
+    |days|-row self-join. The oracle restates the clamped PSI arithmetic
+    in SQL from the same literal edges (q44's proven recipe, but with BOTH
+    sides of the comparison data-derived)."""
+    e = _t(spark, sf_dir, "events").withColumn(
+        "ts", F.col("ts").cast("timestamp")
+    )
+    v = rolling_psi_verdicts(
+        e, F.dayofmonth(F.col("ts")), "value", DRIFT_VALUE_EDGES
+    )
+    return v.select(
+        "window_id",
+        "prev_window_id",
+        "n_rows",
+        F.round("psi", 6).alias("psi"),
+        F.col("passed").cast("int").alias("passed"),
+    )
+
+
+def _rolling_day_counts_cte(
+    window_expr: str = "CAST(EXTRACT(day FROM ts) AS INT)",
+) -> tuple[str, int]:
+    """The per-day bucket-count CTE shared by the q96/q97/q104 oracles —
+    ONE builder so they can never bin differently from each other (or
+    from the _rolling_pairs aggregate they mirror; q62/q64's shared-fixture
+    rule applied to SQL). ``window_expr``: day-of-month for the batch
+    gates, epoch-day for the streaming gate (month-boundary-safe)."""
+    inner = DRIFT_VALUE_EDGES[1:-1]
+    nb = len(inner) + 1
+    vbucket = " + ".join(
+        f"(CASE WHEN value >= {repr(e)} THEN 1 ELSE 0 END)" for e in inner
+    )
+    sums = ",\n    ".join(
+        f"SUM(CASE WHEN value IS NOT NULL AND ({vbucket}) = {i} THEN 1 ELSE 0 END) AS b{i}"
+        for i in range(nb)
+    )
+    cte = f"""
+WITH c AS (
+  SELECT {window_expr} AS window_id,
+    {sums},
+    COUNT(value) AS n
+  FROM events GROUP BY 1)"""
+    return cte, nb
+
+
+def _q96_sql(window_expr: str = "CAST(EXTRACT(day FROM ts) AS INT)") -> str:
+    cte, nb = _rolling_day_counts_cte(window_expr)
+
+    def frac(side: str, i: int) -> str:
+        return f"GREATEST({side}.b{i} * 1.0 / GREATEST({side}.n, 1), {repr(EPS)})"
+
+    terms = " + ".join(
+        f"(({frac('cur', i)}) - ({frac('prv', i)}))"
+        f" * LN(({frac('cur', i)}) / ({frac('prv', i)}))"
+        for i in range(nb)
+    )
+    return f"""{cte}
+SELECT cur.window_id AS window_id,
+       prv.window_id AS prev_window_id,
+       CAST(cur.n AS BIGINT) AS n_rows,
+       ROUND({terms}, 6) AS psi,
+       CASE WHEN ({terms}) <= {PSI_THRESHOLD} THEN 1 ELSE 0 END AS passed
+FROM c cur JOIN c prv ON cur.window_id = prv.window_id + 1
+"""
+
+
+# --------------------------------------------------------------------------
+# q97: window-over-window rolling binned KS (PSI's companion)
+# --------------------------------------------------------------------------
+
+
+def q97_rolling_ks(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Rolling-KS gate: the q96 day-over-day windows, graded with the
+    binned two-sample KS statistic instead of PSI (max |CDF_w − CDF_{w−1}|
+    over bucket prefix sums; catches bulk CDF shifts PSI's EPS clamping
+    mutes). Same one-aggregate + |days|-row self-join plan."""
+    e = _t(spark, sf_dir, "events").withColumn(
+        "ts", F.col("ts").cast("timestamp")
+    )
+    v = rolling_ks_verdicts(
+        e, F.dayofmonth(F.col("ts")), "value", DRIFT_VALUE_EDGES
+    )
+    return v.select(
+        "window_id",
+        "prev_window_id",
+        "n_rows",
+        F.round("ks", 6).alias("ks"),
+        F.col("passed").cast("int").alias("passed"),
+    )
+
+
+def _q97_sql() -> str:
+    cte, nb = _rolling_day_counts_cte()
+
+    def cdf(side: str, i: int) -> str:
+        return " + ".join(
+            f"{side}.b{j} * 1.0 / GREATEST({side}.n, 1)" for j in range(i)
+        )
+
+    diffs = ", ".join(
+        f"ABS(({cdf('cur', i)}) - ({cdf('prv', i)}))" for i in range(1, nb + 1)
+    )
+    ks = f"GREATEST({diffs})"
+    return f"""{cte}
+SELECT cur.window_id AS window_id,
+       prv.window_id AS prev_window_id,
+       CAST(cur.n AS BIGINT) AS n_rows,
+       ROUND({ks}, 6) AS ks,
+       CASE WHEN ({ks}) <= {KS_THRESHOLD} THEN 1 ELSE 0 END AS passed
+FROM c cur JOIN c prv ON cur.window_id = prv.window_id + 1
+"""
+
+
+# --------------------------------------------------------------------------
+# q104: STREAMING rolling PSI — the q96 monitor as a live stream
+# --------------------------------------------------------------------------
+
+
+def q104_streaming_rolling_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Streaming form of the q96 rolling-drift monitor: the events table
+    streams through a watermarked 1-day tumbling-window aggregate whose
+    exprs are the SAME rolling_bucket_aggs the batch path uses
+    (conditional sums compose under micro-batch partial aggregation), then
+    the day-over-day pairing + clamped PSI run on the (tiny) materialized
+    counts. Windows key on EPOCH DAY (datediff from 1970-01-01), not
+    day-of-month — tumbling windows are true calendar days, so a fixture
+    spanning a month boundary must not alias Jan 5 onto Feb 5. The oracle
+    is the q96 arithmetic over the same epoch-day windows — streaming
+    incrementality cannot change the numbers."""
+    e_schema = _t(spark, sf_dir, "events").schema
+    stream = (
+        spark.readStream.schema(e_schema)
+        .option("pathGlobFilter", "events.parquet")
+        .parquet(sf_dir)
+        .withColumn("ts", F.col("ts").cast("timestamp"))
+        .withWatermark("ts", "1 day")
+        .groupBy(F.window("ts", "1 day"))
+        .agg(*rolling_bucket_aggs("value", DRIFT_VALUE_EDGES))
+    )
+    sink = _drain_to_memory(spark, stream, "complete", "q104")
+    counts = sink.select(
+        F.datediff(F.col("window.start"), F.lit("1970-01-01"))
+        .cast("int")
+        .alias("window_id"),
+        *[c for c in sink.columns if c != "window"],
+    )
+    j, cur_fracs, prv_fracs = pair_window_counts(
+        counts, len(DRIFT_VALUE_EDGES) - 1
+    )
+    psi = _clamped_psi(cur_fracs, prv_fracs)
+    return j.select(
+        F.col("cur_window_id").alias("window_id"),
+        F.col("prv_window_id").alias("prev_window_id"),
+        F.col("cur_n").cast("long").alias("n_rows"),
+        F.round(psi, 6).alias("psi"),
+        (psi <= F.lit(float(PSI_THRESHOLD))).cast("int").alias("passed"),
+    )
+
+
+def _q104_sql() -> str:
+    return _q96_sql(
+        window_expr="CAST(date_diff('day', DATE '1970-01-01',"
+        " CAST(ts AS DATE)) AS INT)"
+    )
+
+
+# --------------------------------------------------------------------------
+# q127: PSI drift attribution — the drill-down behind a q44 psi:<col>
+# alarm. PSI is a sum of non-negative per-bin terms, so the terms are an
+# exact additive attribution ("which bins moved, what share of the alarm
+# each carries"). Same ONE-scan/ONE-shuffle wide aggregate as q44; rows
+# explode from the wide result. The reference reports only the aggregate
+# anomaly score (incident_detector.py:285-289) — it cannot say WHY.
+# --------------------------------------------------------------------------
+
+
+def q127_psi_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
+    a = psi_attribution(*_drift_fixture(spark, sf_dir))
+    return a.select(
+        "part_id",
+        "check_name",
+        "bin_idx",
+        F.round("cur_frac", 6).alias("cur_frac"),
+        F.round("base_frac", 6).alias("base_frac"),
+        F.round("contribution", 6).alias("contribution"),
+        F.round("share", 6).alias("share"),
+    )
+
+
+def _q127_sql() -> str:
+    """Per-bin PSI terms restated in SQL from the same literals — identical
+    clamp, identical left-assoc term sum, identical EPS total guard."""
+    def term(pfx: str, i: int, n: str, base: list[float]) -> str:
+        p = f"GREATEST({_drift_frac(pfx, i, n)}, {repr(EPS)})"
+        q = repr(max(base[i], EPS))
+        return f"((({p}) - {q}) * LN(({p}) / {q}))"
+
+    blocks = []
+    for col, pfx, n, base in _DRIFT_COLS:
+        nb = len(base)
+        total = "GREATEST(" + " + ".join(
+            term(pfx, i, n, base) for i in range(nb)
+        ) + f", {repr(EPS)})"
+        for i in range(nb):
+            t = term(pfx, i, n, base)
+            blocks.append(f"""
+SELECT part_id, 'psi:{col}' AS check_name, CAST({i} AS INT) AS bin_idx,
+       ROUND({_drift_frac(pfx, i, n)}, 6) AS cur_frac,
+       CAST({repr(float(base[i]))} AS DOUBLE) AS base_frac,
+       ROUND({t}, 6) AS contribution,
+       ROUND(({t}) / ({total}), 6) AS share
+FROM agg""")
+    union = "\nUNION ALL\n".join(blocks)
+    return f"{_drift_agg_sql()}\n{union}\n"
+
+
+def q133_mannwhitney(spark: SparkSession, sf_dir: str) -> DataFrame:
+    li = _t(spark, sf_dir, "lineitem")
+    out = mannwhitney_u(li, "l_returnflag", "l_quantity")
+    return out.select(
+        "l_returnflag", "u2", "n_group", "n_rest",
+        F.round("z", 6).alias("z"),
+    )
+
+
+Q133_SQL = """
+WITH x AS (
+  SELECT l_returnflag AS g, l_quantity AS v
+  FROM lineitem WHERE l_quantity IS NOT NULL),
+vtot AS (SELECT v, COUNT(*) AS cnt_eq FROM x GROUP BY v),
+vtot2 AS (
+  SELECT v, cnt_eq,
+         COALESCE(SUM(cnt_eq) OVER (ORDER BY v
+           ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS cnt_lt
+  FROM vtot),
+cells AS (SELECT g, v, COUNT(*) AS o FROM x GROUP BY g, v),
+pg AS (
+  SELECT g, SUM(o) AS n_group,
+         SUM(o * (2 * cnt_lt + cnt_eq + 1)) AS two_r
+  FROM cells JOIN vtot2 USING (v) GROUP BY g),
+tot AS (
+  SELECT SUM(cnt_eq) AS n_all,
+         SUM(POWER(CAST(cnt_eq AS DOUBLE), 3) - cnt_eq) AS tie_sum
+  FROM vtot)
+SELECT g AS l_returnflag,
+       CAST(two_r - n_group * (n_group + 1) AS BIGINT) AS u2,
+       CAST(n_group AS BIGINT) AS n_group,
+       CAST(n_all - n_group AS BIGINT) AS n_rest,
+       ROUND(
+         (CAST(two_r - n_group * (n_group + 1) AS DOUBLE)
+          - CAST(n_group AS DOUBLE) * CAST(n_all - n_group AS DOUBLE))
+         / (2.0 * SQRT(
+             CAST(n_group AS DOUBLE) * CAST(n_all - n_group AS DOUBLE) / 12.0
+             * ((n_all + 1)
+                - tie_sum / (CAST(n_all AS DOUBLE) * (n_all - 1))))),
+         6) AS z
+FROM pg CROSS JOIN tot
+"""
+
+
+# --------------------------------------------------------------------------
+# q139: window-over-window rolling chi2 / Cramér's V — completes the
+# rolling family (PSI q96 weights tail moves by log-ratio, KS q97 sees
+# bulk CDF shifts, chi2/V is the calibrated scale-free effect size on the
+# SAME bucket counts, comparable across windows of different sizes).
+# Identical one-aggregate + |days|-row self-join plan; the oracle reuses
+# the one shared day-counts CTE builder (q96/q97/q104's shared-fixture
+# rule) so the three gates can never bin differently, and restates the
+# 2xK contingency algebra with the same zero-cell skip and term order.
+# --------------------------------------------------------------------------
+
+
+def q139_rolling_chi2(spark: SparkSession, sf_dir: str) -> DataFrame:
+    e = _t(spark, sf_dir, "events").withColumn(
+        "ts", F.col("ts").cast("timestamp")
+    )
+    v = rolling_chi2_verdicts(
+        e, F.dayofmonth(F.col("ts")), "value", DRIFT_VALUE_EDGES
+    )
+    return v.select(
+        "window_id",
+        "prev_window_id",
+        "n_rows",
+        F.round("cramers_v", 6).alias("cramers_v"),
+        F.col("passed").cast("int").alias("passed"),
+    )
+
+
+def _q139_sql() -> str:
+    cte, nb = _rolling_day_counts_cte()
+    terms = []
+    for i in range(nb):
+        c_i = f"(cur.b{i} + prv.b{i})"
+        e_cur = f"(cur.n * {c_i} / CAST(cur.n + prv.n AS DOUBLE))"
+        e_prv = f"(prv.n * {c_i} / CAST(cur.n + prv.n AS DOUBLE))"
+        terms.append(
+            f"CASE WHEN {c_i} > 0 THEN "
+            f"POWER(cur.b{i} - {e_cur}, 2) / {e_cur} "
+            f"+ POWER(prv.b{i} - {e_prv}, 2) / {e_prv} ELSE 0.0 END"
+        )
+    chi2 = " + ".join(terms)
+    return f"""{cte}
+SELECT cur.window_id AS window_id,
+       prv.window_id AS prev_window_id,
+       CAST(cur.n AS BIGINT) AS n_rows,
+       ROUND(CASE WHEN cur.n > 0 AND prv.n > 0 THEN
+         SQRT(({chi2}) / CAST(cur.n + prv.n AS DOUBLE)) END, 6) AS cramers_v,
+       CAST(CASE WHEN cur.n > 0 AND prv.n > 0 THEN
+         SQRT(({chi2}) / CAST(cur.n + prv.n AS DOUBLE)) END <= 0.2 AS INT)
+         AS passed
+FROM c cur JOIN c prv ON cur.window_id = prv.window_id + 1
+"""
+
+
+# --------------------------------------------------------------------------
+# q142: Wasserstein-1 (earth-mover) drift per event_type over fixed
+# equi-width bins — the integral member of the drift family (PSI q44 =
+# divergence, KS q10 = supremum): a one-bin shift and a ten-bin shift cost
+# PSI/KS the same, W1 charges the transport distance. Sample A = even
+# event_ids, sample B = odd, with a planted +75 shift on B's 'error' rows
+# so exactly that group crosses the threshold. The per-bin CDF difference
+# stays the EXACT integer |cum_a*tot_b - cum_b*tot_a| (decimal(38,0)
+# Spark-side — bigint overflows at 10^12 rows) and only the single final
+# width*num/(tot_a*tot_b) division is float, so Spark's unordered double
+# SUM can never hash-diverge from the oracle's ordered one.
+# --------------------------------------------------------------------------
+
+
+def q142_wasserstein_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
+    ev = _t(spark, sf_dir, "events").where(F.col("value").isNotNull())
+    side = (F.col("event_id") % 2) == 0
+    shifted = F.col("value") + F.when(
+        (~side) & (F.col("event_type") == "error"), F.lit(75.0)
+    ).otherwise(F.lit(0.0))
+    df = ev.select(
+        "event_type", shifted.alias("v"), side.alias("sa")
+    )
+    return wasserstein_binned(
+        df, "v", F.col("sa"), ["event_type"],
+        lo=0.0, hi=500.0, n_bins=20, threshold=10.0,
+    )
+
+
+Q142_SQL = """
+WITH x AS (
+  SELECT event_type,
+         CAST(value AS DOUBLE)
+           + CASE WHEN event_id % 2 <> 0 AND event_type = 'error'
+                  THEN 75.0 ELSE 0.0 END AS v,
+         (event_id % 2 = 0) AS sa
+  FROM events WHERE value IS NOT NULL),
+b AS (
+  SELECT event_type,
+         CAST(least(greatest(CAST(floor(v / 25.0) AS BIGINT), 0), 19) AS INT)
+           AS bin,
+         SUM(CASE WHEN sa THEN 1 ELSE 0 END) AS c_a,
+         SUM(CASE WHEN sa THEN 0 ELSE 1 END) AS c_b
+  FROM x GROUP BY 1, 2),
+grid AS (
+  SELECT event_type, bin
+  FROM (SELECT DISTINCT event_type FROM b)
+  CROSS JOIN (SELECT unnest(generate_series(0, 19)) AS bin)),
+f AS (
+  SELECT grid.event_type, grid.bin,
+         COALESCE(c_a, 0) AS c_a, COALESCE(c_b, 0) AS c_b
+  FROM grid LEFT JOIN b USING (event_type, bin)),
+c AS (
+  SELECT event_type, bin,
+         SUM(c_a) OVER w AS cum_a, SUM(c_b) OVER w AS cum_b
+  FROM f WINDOW w AS (PARTITION BY event_type ORDER BY bin
+                      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)),
+c2 AS (
+  SELECT event_type, cum_a, cum_b,
+         MAX(cum_a) OVER (PARTITION BY event_type) AS tot_a,
+         MAX(cum_b) OVER (PARTITION BY event_type) AS tot_b
+  FROM c),
+agg AS (
+  SELECT event_type,
+         SUM(ABS(cum_a * tot_b - cum_b * tot_a)) AS num,
+         MAX(tot_a) AS tot_a, MAX(tot_b) AS tot_b
+  FROM c2 GROUP BY 1)
+SELECT event_type,
+       CAST(tot_a AS BIGINT) AS n_a,
+       CAST(tot_b AS BIGINT) AS n_b,
+       ROUND(25.0 * CAST(num AS DOUBLE)
+             / (CAST(tot_a AS DOUBLE) * CAST(tot_b AS DOUBLE)), 6) AS w1,
+       ROUND(25.0 * CAST(num AS DOUBLE)
+             / (CAST(tot_a AS DOUBLE) * CAST(tot_b AS DOUBLE)), 6) > 10.0
+         AS drift
+FROM agg
+WHERE tot_a > 0 AND tot_b > 0
+"""

@@ -26,9 +26,10 @@ from dataclasses import dataclass
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from baskerville_spark.gates.fixtures import _t
 from baskerville_spark.gates.iforest import MAX_TRAIN_ROWS, training_sample
 
 LEARNING_RATE = 0.3
@@ -163,3 +164,39 @@ def predict_label(
     return predict_proba(df, model, id_col, feature_cols).select(
         "id", (F.col("probability") > 0.5).cast("int").alias("predicted")
     )
+
+
+# ---------------------------------------------------------------------------
+# Q56 — the supervised labeler: deterministic gradient-boosted stumps must
+#       reproduce a wide-margin planted labeling exactly
+# ---------------------------------------------------------------------------
+
+def q56_gbm_labeler(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The reference's supervised attack labeler (GBM over request-set
+    features, SURVEY §2.11) rebuilt as deterministic gradient-boosted
+    stumps (ml/gbm.py: driver fit on a hard-capped hash-deterministic
+    sample with an EXACT prefix-sum stump search — no RNG anywhere —
+    Arrow-batched scoring). Fixture: positives (vec_id ≡ 0 mod 40) get
+    +5.0 on the first embedding component, a margin the boosted stumps
+    must carve exactly; the gate hashes predicted-positive ids against
+    the planted labeling, so one misclassified row breaks it."""
+    emb = _t(spark, sf_dir, "embeddings")
+    feats = emb.select(
+        "vec_id",
+        (
+            F.element_at("embedding", 1).cast("double")
+            + F.when(F.col("vec_id") % 40 == 0, F.lit(5.0)).otherwise(F.lit(0.0))
+        ).alias("f1"),
+        F.element_at("embedding", 2).cast("double").alias("f2"),
+        (F.col("vec_id") % 40 == 0).cast("double").alias("label"),
+    )
+    model = train_gbm(feats, "vec_id", ["f1", "f2"], "label")
+    pred = predict_label(feats, model, "vec_id", ["f1", "f2"])
+    return pred.where(F.col("predicted") == 1).select(
+        F.col("id").alias("vec_id"), "predicted"
+    )
+
+
+Q56_SQL = """
+SELECT vec_id, 1 AS predicted FROM embeddings WHERE vec_id % 40 = 0
+"""

@@ -19,6 +19,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import IntegerType
 
+from baskerville_spark.gates.fixtures import _t
+
 
 def tz_offset_udf(spark: SparkSession):
     """Arrow-batched lon→UTC-offset lookup against a broadcast table."""
@@ -59,3 +61,29 @@ def localize_events(df: DataFrame) -> DataFrame:
     return with_off.groupBy("user_id", "lon", "tz_offset").agg(
         F.count(F.when(F.hour(local_ts) < 6, F.lit(1))).alias("n_night_events")
     )
+
+
+def q37_geo_localize(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Vectorized pandas-UDF + broadcast lookup-table pattern (reference
+    compute_geotime, udfs.py:41-62, minus the tzwhere dependency): a
+    360-entry nautical-timezone table is broadcast once and indexed inside
+    an Arrow-batched pandas UDF; local-time math stays JVM-side."""
+    e = _t(spark, sf_dir, "events")
+    lon = (F.col("user_id") * 37 % 360 - 180).cast("int")
+    return localize_events(e.withColumn("lon", lon))
+
+
+Q37_SQL = """
+WITH x AS (
+  SELECT user_id, ts,
+         CAST((user_id * 37) % 360 - 180 AS INT) AS lon
+  FROM events),
+y AS (
+  SELECT user_id, lon,
+         CAST(floor((lon + 7.5) / 15.0) AS INT) AS tz_offset, ts
+  FROM x)
+SELECT user_id, lon, tz_offset,
+       COUNT(CASE WHEN EXTRACT(hour FROM ts + to_hours(tz_offset)) < 6
+                  THEN 1 END) AS n_night_events
+FROM y GROUP BY 1, 2, 3
+"""

@@ -34,8 +34,10 @@ from dataclasses import dataclass
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from baskerville_spark.gates.fixtures import _t
 
 
 def _c(n: float) -> float:
@@ -227,3 +229,44 @@ def top_anomalies(
     same primitive plus an approx-quantile pass."""
     scored = score_anomalies(df, forest, id_col, feature_cols)
     return scored.orderBy(F.desc("anomaly_score"), F.asc("id")).limit(k)
+
+
+# ---------------------------------------------------------------------------
+# Q55 — the real anomaly model: deterministic Isolation Forest (driver-
+#       trained on a capped sample, Arrow-batch scored) must isolate the
+#       planted outliers with recall 1.0 and zero false positives
+# ---------------------------------------------------------------------------
+
+def q55_iforest_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The reference's core anomaly model (external Scala spark-iforest
+    jar, anomaly_model.py:13,160-209) rebuilt as a pure-numpy deterministic
+    Isolation Forest (ml/iforest.py): training on a hard-capped
+    hash-threshold sample driver-side, scoring as one Arrow-batched
+    projection pass. Fixture: two features from the embeddings table with
+    every 50th vector shifted +25 — far outside the data range, so a
+    correct forest MUST rank exactly those as the top-|planted| anomalies.
+    The gate hashes the flagged id set against the planted id set in SQL:
+    a single false positive or miss breaks it. (The score values
+    themselves are not SQL-reproducible — the set-equality verdict is the
+    oracle-checkable contract, same pattern as q46.)"""
+    emb = _t(spark, sf_dir, "embeddings")
+    feats = emb.select(
+        "vec_id",
+        (
+            F.element_at("embedding", 1).cast("double")
+            + F.when(F.col("vec_id") % 50 == 0, F.lit(25.0)).otherwise(F.lit(0.0))
+        ).alias("f1"),
+        (
+            F.element_at("embedding", 2).cast("double")
+            + F.when(F.col("vec_id") % 50 == 0, F.lit(25.0)).otherwise(F.lit(0.0))
+        ).alias("f2"),
+    )
+    n_planted = feats.where(F.col("vec_id") % 50 == 0).count()
+    forest = train_iforest(feats, "vec_id", ["f1", "f2"])
+    top = top_anomalies(feats, forest, "vec_id", ["f1", "f2"], k=n_planted)
+    return top.select(F.col("id").alias("vec_id"), F.lit(1).alias("flagged"))
+
+
+Q55_SQL = """
+SELECT vec_id, 1 AS flagged FROM embeddings WHERE vec_id % 50 = 0
+"""

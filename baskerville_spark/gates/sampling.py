@@ -20,8 +20,10 @@ equivalent (q28, q38, q55 all ride it).
 
 from __future__ import annotations
 
-from pyspark.sql import Column
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from baskerville_spark.gates.fixtures import _t
 
 #: bucket space for the keep threshold; 1e6 gives ppm granularity
 N_BUCKETS = 1_000_000
@@ -204,3 +206,160 @@ def select_within_token_budget(
         .drop("__pri", "__tok", "__block", "__in")
     )
     return out
+
+
+#: per-stratum sampling fractions as hex-byte thresholds over md5(event_id):
+#: a row is sampled when the first two hex chars of its md5 are < threshold
+#: (n/256 resolution). md5 is identical across engines, so the "random"
+#: variate is deterministic and the DuckDB oracle reproduces the exact
+#: sample — unlike seedful sampleBy, whose Bernoulli draw is engine-private
+#: (sampleBy itself stays demonstrated in test_checks.py).
+SAMPLE_THRESHOLDS = {
+    "click": "40",     # 64/256  = 0.25
+    "view": "19",      # 25/256  ≈ 0.10
+    "purchase": "80",  # 128/256 = 0.50
+    "signup": "33",    # 51/256  ≈ 0.20
+    "error": "0c",     # 12/256  ≈ 0.05
+}
+
+
+def q28_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Deterministic hash-based stratified sampling (the oracle-checkable
+    form of the reference's sampleBy, tasks.py:1486-1499): md5(event_id) is
+    the uniform variate; each stratum keeps rows under its hex threshold.
+    Scale: a pure map-side filter — no shuffle, no state, reproducible
+    across engines, runs, and partitionings (sampleBy's seed is only stable
+    for a fixed partitioning)."""
+    e = _t(spark, sf_dir, "events")
+    thr = F.create_map(
+        *[F.lit(x) for kv in SAMPLE_THRESHOLDS.items() for x in kv]
+    )
+    variate = F.substring(F.md5(F.col("event_id").cast("string")), 1, 2)
+    return (
+        e.where(variate < F.element_at(thr, F.col("event_type")))
+        .groupBy("event_type")
+        .agg(F.count(F.lit(1)).alias("n_sampled"))
+    )
+
+
+def _q28_sql() -> str:
+    cases = " ".join(
+        f"WHEN '{t}' THEN '{h}'" for t, h in SAMPLE_THRESHOLDS.items()
+    )
+    return f"""
+SELECT event_type, COUNT(*) AS n_sampled
+FROM events
+WHERE substring(md5(CAST(event_id AS VARCHAR)), 1, 2)
+      < (CASE event_type {cases} END)
+GROUP BY event_type
+"""
+
+
+# --------------------------------------------------------------------------
+# q78: domain-mixture rebalancing sample
+# --------------------------------------------------------------------------
+
+_MIX_WEIGHTS = {"src0": 0.4, "src1": 0.25, "src2": 0.2, "src3": 0.1, "src4": 0.05}
+
+
+def q78_mixture_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Pretraining domain rebalancing: downsample `documents` to the target
+    source mixture (40/25/20/10/5) without upsampling — T = min_g n_g/w_g,
+    per-group deterministic md5-threshold keep (functions/sampling.py).
+    ONE tiny group-count shuffle + a map-side filter; the oracle recomputes
+    the group counts, the same IEEE-double rates, and the same 60-bit md5
+    bucket, so the exact sampled row SET is under the hash."""
+    d = _t(spark, sf_dir, "documents").select("doc_id", "source")
+    return mixture_sample(d, _MIX_WEIGHTS)
+
+
+def _q78_sql() -> str:
+    vals = ", ".join(
+        f"('{g}', CAST({w} AS DOUBLE))" for g, w in sorted(_MIX_WEIGHTS.items())
+    )
+    return f"""
+WITH w(source, w) AS (VALUES {vals}),
+n AS (SELECT source, COUNT(*) AS n FROM documents GROUP BY source),
+t AS (SELECT MIN(n.n / w.w) AS total FROM n JOIN w USING (source)),
+thr AS (
+  SELECT n.source,
+         CAST(floor(((w.w * t.total) / n.n) * 1000000) AS BIGINT) + 1 AS thr
+  FROM n JOIN w USING (source), t)
+SELECT d.doc_id, d.source
+FROM documents d JOIN thr USING (source)
+WHERE ('0x' || substr(md5(CAST(d.doc_id AS VARCHAR)), 1, 15))::BIGINT % 1000000
+      < thr.thr
+"""
+
+
+def q100_corpus_split(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Split gate: the full (doc_id -> train/val/test) assignment is under
+    the hash — deterministic md5-bucket thresholds (80/10/10), disjoint
+    and exhaustive by construction, reproducible across engines and
+    repartitionings (the leak-proofness property seedful randomSplit lacks)."""
+    d = _t(spark, sf_dir, "documents")
+    return d.select("doc_id", train_val_test_split())
+
+
+Q100_SQL = """
+SELECT doc_id,
+       CASE WHEN b < 800 THEN 'train'
+            WHEN b < 900 THEN 'val'
+            ELSE 'test' END AS split
+FROM (
+  SELECT doc_id,
+         ('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 15))::BIGINT % 1000 AS b
+  FROM documents)
+"""
+
+
+# --------------------------------------------------------------------------
+# q140: budget-constrained corpus selection — "the greedy prefix of the
+# corpus, in priority order, up to N tokens" (training-mix composition).
+# Priority here is md5(doc_id) — an unbiased deterministic shuffle both
+# engines spell identically (lowercase hex of the decimal string) — and
+# the running total is the packing.py two-phase distributed prefix sum
+# lifted to a COMPOSITE (priority, id) sort key: per-block totals + max
+# struct bounds collected in ONE job, block membership re-derived from
+# the row's own key (struct comparison), within-block window cumsum.
+# cum_tokens is exact bigint; selected = cum_tokens <= budget. Oracle:
+# one SQL cumulative window over the identical ordering.
+# --------------------------------------------------------------------------
+
+
+def q140_token_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
+    docs = _t(spark, sf_dir, "documents")
+    toks = F.size(
+        F.filter(
+            F.split(F.trim(F.lower(F.col("text"))), r"\s+"),
+            lambda t: t != "",
+        )
+    )
+    base = docs.select(
+        "doc_id",
+        toks.cast("long").alias("n_tokens"),
+        F.md5(F.col("doc_id").cast("string").cast("binary")).alias("pri"),
+    )
+    out = select_within_token_budget(
+        base, "doc_id", "n_tokens", budget=20000, priority_col="pri"
+    )
+    return out.select("doc_id", "n_tokens", "cum_tokens", "selected")
+
+
+Q140_SQL = """
+WITH t AS (
+  SELECT doc_id,
+         CAST(len(list_filter(string_split_regex(trim(lower(text)), '\\s+'),
+                              x -> x <> '')) AS BIGINT) AS n_tokens,
+         md5(CAST(doc_id AS VARCHAR)) AS pri
+  FROM documents)
+SELECT doc_id,
+       n_tokens,
+       CAST(SUM(n_tokens) OVER (ORDER BY pri ASC, doc_id ASC
+         ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT)
+         AS cum_tokens,
+       SUM(n_tokens) OVER (ORDER BY pri ASC, doc_id ASC
+         ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) <= 20000
+         AS selected
+FROM t
+"""

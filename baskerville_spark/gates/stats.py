@@ -2,8 +2,10 @@
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from baskerville_spark.gates.fixtures import _t
 
 #: robust z-score above which ``robust_outlier_violations`` flags a value
 OUTLIER_K = 5.0
@@ -55,3 +57,36 @@ def robust_outlier_violations(
             F.round("mad", 6).alias("mad"),
         )
     )
+
+
+# --------------------------------------------------------------------------
+# q81: robust (median/MAD) outlier flagging
+# --------------------------------------------------------------------------
+
+
+def q81_robust_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-event-type robust z-score outliers on events.value:
+    |x − median| > 5 · 1.4826 · MAD. Exact percentile at gate scale
+    (DuckDB quantile_cont parity); the threshold's float expression is
+    written in the SAME op order in both engines so the strict inequality
+    bites identically (checks/stats.robust_outlier_violations)."""
+    e = _t(spark, sf_dir, "events").select("event_id", "event_type", "value")
+    return robust_outlier_violations(
+        e, "value", part_col="event_type", id_cols=["event_id"]
+    )
+
+
+Q81_SQL = """
+WITH m AS (
+  SELECT event_type, quantile_cont(CAST(value AS DOUBLE), 0.5) AS med
+  FROM events WHERE value IS NOT NULL GROUP BY 1),
+d AS (
+  SELECT e.event_type, e.event_id, CAST(e.value AS DOUBLE) AS x, m.med
+  FROM events e JOIN m USING (event_type) WHERE e.value IS NOT NULL),
+md AS (
+  SELECT event_type, quantile_cont(abs(x - med), 0.5) AS mad FROM d GROUP BY 1)
+SELECT d.event_type, d.event_id, d.x AS value,
+       ROUND(d.med, 6) AS med, ROUND(md.mad, 6) AS mad
+FROM d JOIN md USING (event_type)
+WHERE abs(d.x - d.med) > 5.0 * 1.4826 * greatest(md.mad, 1e-12)
+"""

@@ -44,9 +44,11 @@ from __future__ import annotations
 
 from typing import Sequence
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from baskerville_spark.gates.fixtures import _t
 
 __all__ = ["suggest_constraints", "functional_dependency"]
 
@@ -176,3 +178,148 @@ def functional_dependency(
         ).alias("violation_rate"),
         (F.col("__n_viol") == 0).alias("passed"),
     )
+
+
+# --------------------------------------------------------------------------
+# q129: constraint suggestion (checks/suggest.py) — the Deequ-style
+# profile->suite loop the reference cannot do (its rules are hard-coded per
+# feature class, src/baskerville/features/feature_*.py). Profiles a derived
+# orders frame (planted 2% NULL tag column with 30 distinct values, so the
+# padded-completeness branch fires and the membership guard REJECTS a
+# 30-value column) in two bounded passes and emits deterministic suggested
+# constraints. The oracle restates every rule data-driven: guarded UNION ALL
+# branches per (column x kind) whose WHERE clauses are the suggestion rules
+# themselves, so a data change that flips a rule flips both engines.
+# --------------------------------------------------------------------------
+
+def q129_suggest_constraints(spark: SparkSession, sf_dir: str) -> DataFrame:
+    o = _t(spark, sf_dir, "orders")
+    src = o.select(
+        "o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice",
+        "o_orderpriority",
+        F.when(F.col("o_orderkey") % 50 == 0, F.lit(None)).otherwise(
+            F.concat(F.lit("c"), (F.col("o_orderkey") % 30).cast("string"))
+        ).alias("o_tag"),
+    )
+    return suggest_constraints(src)
+
+
+_Q129_COLS = [
+    # (name, numeric, string)
+    ("o_orderkey", True, False),
+    ("o_custkey", True, False),
+    ("o_orderstatus", False, True),
+    ("o_totalprice", True, False),
+    ("o_orderpriority", False, True),
+    ("o_tag", False, True),
+]
+
+
+_Q129_PROFILE = ",\n".join(
+    f"""    COUNT({c}) AS nn_{c}, COUNT(DISTINCT {c}) AS nd_{c}"""
+    + (f""",
+    CAST(MIN({c}) AS DOUBLE) AS lo_{c},
+    CAST(MAX({c}) AS DOUBLE) AS hi_{c}""" if num else "")
+    for c, num, _ in _Q129_COLS
+)
+
+
+_Q129_BRANCHES = "\nUNION ALL\n".join(
+    b for c, num, s in _Q129_COLS for b in filter(None, [
+        f"""SELECT '{c}' AS col_name, 'completeness' AS kind,
+       CASE WHEN nn_{c} = n THEN CAST(0.0 AS DOUBLE)
+            ELSE ROUND(CAST(n - nn_{c} AS DOUBLE) / n * 1.25, 6) END
+         AS threshold,
+       CAST(NULL AS DOUBLE) AS lo, CAST(NULL AS DOUBLE) AS hi,
+       CAST(NULL AS VARCHAR) AS members, n AS n_rows
+FROM p WHERE CAST(n - nn_{c} AS DOUBLE) / n <= 0.05""",
+        f"""SELECT '{c}', 'unique', CAST(0.0 AS DOUBLE),
+       CAST(NULL AS DOUBLE), CAST(NULL AS DOUBLE), CAST(NULL AS VARCHAR), n
+FROM p WHERE nn_{c} = n AND nd_{c} = n""",
+        (f"""SELECT '{c}', 'bounds', CAST(0.0 AS DOUBLE),
+       ROUND(lo_{c}, 6), ROUND(hi_{c}, 6), CAST(NULL AS VARCHAR), n
+FROM p WHERE nn_{c} > 0""" if num else None),
+        (f"""SELECT '{c}', 'membership', CAST(0.0 AS DOUBLE),
+       CAST(NULL AS DOUBLE), CAST(NULL AS DOUBLE),
+       (SELECT string_agg(v, ',' ORDER BY v)
+        FROM (SELECT DISTINCT {c} AS v FROM src WHERE {c} IS NOT NULL)), n
+FROM p WHERE nd_{c} BETWEEN 1 AND 20""" if s else None),
+    ])
+)
+
+
+Q129_SQL = f"""
+WITH src AS (
+  SELECT o_orderkey, o_custkey, o_orderstatus, o_totalprice, o_orderpriority,
+         CASE WHEN o_orderkey % 50 = 0 THEN NULL
+              ELSE 'c' || CAST(o_orderkey % 30 AS VARCHAR) END AS o_tag
+  FROM orders),
+p AS (
+  SELECT CAST(COUNT(*) AS BIGINT) AS n,
+{_Q129_PROFILE}
+  FROM src)
+{_Q129_BRANCHES}
+"""
+
+
+# --------------------------------------------------------------------------
+# q130: functional-dependency checks (checks/suggest.py). Uniqueness proves
+# a KEY; an FD proves AGREEMENT — "transcript rows sharing a clip_id must
+# agree on codec" is the audio-table shape. Three FDs: a holding one
+# (o_orderkey -> o_orderstatus, key->attribute), a violated single-column
+# one (l_orderkey -> l_returnflag), and a violated COMPOSITE determinant
+# ((l_orderkey, l_linenumber) -> l_partkey). Two-phase plan per FD:
+# map-side-combined dropDuplicates on (det, dep), then count per group —
+# the exchange carries distinct pairs, never raw rows. NULL dependents
+# count as a value (SQL DISTINCT semantics, identical in both engines).
+# --------------------------------------------------------------------------
+
+def q130_functional_deps(spark: SparkSession, sf_dir: str) -> DataFrame:
+    o = _t(spark, sf_dir, "orders")
+    li = _t(spark, sf_dir, "lineitem")
+    return (
+        functional_dependency(o, "orders_key_status",
+                              ["o_orderkey"], "o_orderstatus")
+        .unionByName(functional_dependency(
+            li, "lineitem_order_returnflag",
+            ["l_orderkey"], "l_returnflag"))
+        .unionByName(functional_dependency(
+            li, "lineitem_orderline_partkey",
+            ["l_orderkey", "l_linenumber"], "l_partkey"))
+    )
+
+
+Q130_SQL = """
+WITH fd1 AS (
+  SELECT CAST(COUNT(*) AS BIGINT) AS n_groups,
+         CAST(SUM(CASE WHEN n_dep > 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_viol
+  FROM (SELECT o_orderkey, COUNT(*) AS n_dep
+        FROM (SELECT DISTINCT o_orderkey, o_orderstatus FROM orders)
+        GROUP BY o_orderkey)),
+fd2 AS (
+  SELECT CAST(COUNT(*) AS BIGINT) AS n_groups,
+         CAST(SUM(CASE WHEN n_dep > 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_viol
+  FROM (SELECT l_orderkey, COUNT(*) AS n_dep
+        FROM (SELECT DISTINCT l_orderkey, l_returnflag FROM lineitem)
+        GROUP BY l_orderkey)),
+fd3 AS (
+  SELECT CAST(COUNT(*) AS BIGINT) AS n_groups,
+         CAST(SUM(CASE WHEN n_dep > 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_viol
+  FROM (SELECT l_orderkey, l_linenumber, COUNT(*) AS n_dep
+        FROM (SELECT DISTINCT l_orderkey, l_linenumber, l_partkey
+              FROM lineitem)
+        GROUP BY l_orderkey, l_linenumber))
+SELECT 'orders_key_status' AS fd_name, n_groups, n_viol AS n_violating,
+       ROUND(CAST(n_viol AS DOUBLE) / GREATEST(n_groups, 1), 6)
+         AS violation_rate,
+       n_viol = 0 AS passed
+FROM fd1
+UNION ALL
+SELECT 'lineitem_order_returnflag', n_groups, n_viol,
+       ROUND(CAST(n_viol AS DOUBLE) / GREATEST(n_groups, 1), 6), n_viol = 0
+FROM fd2
+UNION ALL
+SELECT 'lineitem_orderline_partkey', n_groups, n_viol,
+       ROUND(CAST(n_viol AS DOUBLE) / GREATEST(n_groups, 1), 6), n_viol = 0
+FROM fd3
+"""
