@@ -14,11 +14,9 @@ Synthetic gate fixtures are a per-index ``plant(i)`` run through
 
 from __future__ import annotations
 
-import uuid
 from collections.abc import Callable
 
-from pyspark.sql import DataFrame, SparkSession, Window
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame, SparkSession
 
 from baskerville_spark.gates import (
     audio_dedup,
@@ -27,8 +25,12 @@ from baskerville_spark.gates import (
     bloom,
     bpe,
     classify,
+    completeness,
+    consistency,
     dedup,
     drift,
+    evolution,
+    feature_loop,
     features,
     fixtures,
     gbm,
@@ -36,56 +38,27 @@ from baskerville_spark.gates import (
     graph,
     history,
     iforest,
+    kafka_shaped,
+    layout,
     multimodal,
     packing,
+    registry,
     sampling,
+    schema_check,
+    sensitive,
     similarity,
+    snapshot,
+    state,
+    stateful,
     stats,
     suggest,
     text,
+    timegrid,
     uniqueness,
     validation,
     web,
 )
-from baskerville_spark.gates.fixtures import (
-    EVENT_TYPES,
-    _drain_to_memory,
-    _gate_tmp_detach,
-    _q21_sql,
-    _shared_clip_fixture,
-    _split_events_mod3,
-    _stream_shuffle,
-    _t,
-    _verdict_grid,
-)
-
-
-def q23_streaming_window_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Structured Streaming tumbling-window agg (SURVEY §2.10), driven to
-    completion over the events parquet; result equals the batch oracle."""
-    e_schema = _t(spark, sf_dir, "events").schema
-    stream = (
-        spark.readStream.schema(e_schema)
-        .option("pathGlobFilter", "events.parquet")  # stream source needs a dir
-        .parquet(sf_dir)
-        .withColumn("ts", F.col("ts").cast("timestamp"))  # NTZ → event-time type
-        .withWatermark("ts", "1 hour")
-        .groupBy(F.window("ts", "1 hour"), "event_type")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-    )
-    out = _drain_to_memory(spark, stream, "complete", "q23")
-    return out.select(
-        F.unix_timestamp(F.col("window.start")).alias("bucket_epoch"),
-        "event_type",
-        "cnt",
-    )
-
-
-_Q23_SQL = """
-SELECT CAST(floor(epoch(date_trunc('hour', ts))) AS BIGINT) AS bucket_epoch,
-       event_type, COUNT(*) AS cnt
-FROM events GROUP BY 1, 2
-"""
+from baskerville_spark.gates.fixtures import EVENT_TYPES  # noqa: F401  (perfbench reads it)
 
 
 # ---------------------------------------------------------------------------
@@ -95,1365 +68,6 @@ FROM events GROUP BY 1, 2
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship query on /root/testdata/sf0.001; driver checks rows>0."""
     return web.q01_request_sets(spark, "/root/testdata/sf0.001")
-
-
-def q29_state_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Incremental state upsert (reference request-set cache full_outer merge,
-    request_set_cache.py:370-400) via runtime.state.upsert_state."""
-    from baskerville_spark.gates.state import upsert_state
-
-    e = _t(spark, sf_dir, "events")
-    ts_epoch = F.unix_timestamp(F.col("ts").cast("timestamp"))
-    half = F.lit("2024-01-15 00:00:00")
-    agg = lambda df: df.groupBy("user_id").agg(  # noqa: E731
-        F.count(F.lit(1)).alias("n_events"),
-        F.max(ts_epoch).alias("updated_at"),
-    )
-    state = agg(e.where(F.col("ts") < half))
-    updates = agg(e.where(F.col("ts") >= half))
-    return upsert_state(state, updates, keys=["user_id"], value_cols=["n_events"])
-
-
-_Q29_SQL = """
-WITH s AS (
-  SELECT user_id, COUNT(*) AS n_events,
-         CAST(floor(epoch(MAX(ts))) AS BIGINT) AS updated_at
-  FROM events WHERE ts < TIMESTAMP '2024-01-15 00:00:00' GROUP BY user_id),
-u AS (
-  SELECT user_id, COUNT(*) AS n_events,
-         CAST(floor(epoch(MAX(ts))) AS BIGINT) AS updated_at
-  FROM events WHERE ts >= TIMESTAMP '2024-01-15 00:00:00' GROUP BY user_id)
-SELECT COALESCE(u.user_id, s.user_id) AS user_id,
-       CASE WHEN u.user_id IS NOT NULL THEN u.n_events ELSE s.n_events END AS n_events,
-       CASE WHEN u.user_id IS NOT NULL THEN u.updated_at ELSE s.updated_at END AS updated_at
-FROM s FULL OUTER JOIN u ON s.user_id = u.user_id
-"""
-
-
-def q39_streaming_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Structured Streaming dropDuplicates with watermark (SURVEY §2.10
-    exactly-once dedup shape): the deduped (user, type) stream aggregates to
-    distinct-user counts per type, equal to the batch DISTINCT oracle."""
-    e_schema = _t(spark, sf_dir, "events").schema
-    stream = (
-        spark.readStream.schema(e_schema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir)
-        .withColumn("ts", F.col("ts").cast("timestamp"))
-        .withWatermark("ts", "1 hour")
-        .dropDuplicates(["user_id", "event_type"])
-        .select("user_id", "event_type")
-    )
-    return (
-        _drain_to_memory(spark, stream, "append", "q39")
-        .groupBy("event_type")
-        .agg(F.count(F.lit(1)).alias("n_users"))
-    )
-
-
-_Q39_SQL = """
-SELECT event_type, COUNT(DISTINCT user_id) AS n_users FROM events GROUP BY event_type
-"""
-
-
-def q45_streaming_kafka_shaped(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Kafka-source Structured Streaming cell (SURVEY §2.1, reference
-    tasks.py:304-352): a broker-free file-backed stream presenting the SAME
-    wire schema as format('kafka') — key/value binary, topic, partition,
-    offset, timestamp — decoded with from_json(value) against a declared
-    schema, micro-batched by maxFilesPerTrigger (the file analog of
-    maxOffsetsPerTrigger). On a real cluster only the source line changes.
-    Oracle = the same aggregation over the original events table."""
-    import shutil
-    import tempfile
-
-    from baskerville_spark.gates.kafka_shaped import (
-        decode_json_values, read_kafka_shaped_stream, write_kafka_shaped,
-    )
-
-    e = _t(spark, sf_dir, "events")
-    tmp = tempfile.mkdtemp(prefix="q45_kafka_")
-    try:
-        # 4 files / 2 per trigger = exactly 2 micro-batches: the minimum that
-        # still proves incremental processing (assert below), since each
-        # complete-mode micro-batch costs ~3-4 s of fixed local overhead.
-        write_kafka_shaped(
-            e, tmp, topic="events",
-            value_struct=F.struct("event_id", "user_id", "event_type", "value"),
-            key_col=F.col("user_id"),
-        )
-        name = f"q45_out_{uuid.uuid4().hex[:8]}"
-        with _stream_shuffle(spark):
-            stream = read_kafka_shaped_stream(spark, tmp)
-            decoded = decode_json_values(
-                stream, "event_id bigint, user_id bigint, event_type string, value double"
-            )
-            agg = decoded.groupBy("event_type").agg(
-                F.count(F.lit(1)).alias("n"),
-                F.round(F.sum("value"), 2).alias("sum_value"),
-            )
-            # availableNow: drain everything in maxFilesPerTrigger-sized batches
-            # and self-terminate. processAllAvailable() on an unbounded trigger
-            # made wall time trigger-scheduling-dependent — identical code
-            # measured 3.9-12.7 s across r04 captures under load (VERDICT item
-            # #7); the bounded trigger runs exactly the planned batches and
-            # stops, so timing tracks work, not poll sleeps.
-            q = (
-                agg.writeStream.outputMode("complete")
-                .format("memory")
-                .queryName(name)
-                .trigger(availableNow=True)
-                .start()
-            )
-            try:
-                q.awaitTermination(120)
-                n_batches = q.lastProgress["batchId"] + 1 if q.lastProgress else 0
-            finally:
-                q.stop()
-        if n_batches < 2:  # not `assert`: python -O must not disable the gate
-            raise RuntimeError(f"expected >=2 micro-batches, got {n_batches}")
-        out = spark.table(name).persist()
-        out.count()
-        return out
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-
-
-_Q45_SQL = """
-SELECT event_type, COUNT(*) AS n, ROUND(CAST(SUM(value) AS DOUBLE), 2) AS sum_value
-FROM events GROUP BY event_type
-"""
-
-
-# ---------------------------------------------------------------------------
-# Q47 — JDBC scan under the hash gate: parquet → embedded Derby → range-
-#       partitioned JDBC read → aggregate, oracle on the original parquet
-# ---------------------------------------------------------------------------
-
-def q47_jdbc_segment_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Puts the JDBC source path (reference's Postgres training/cache scans,
-    src/baskerville/models/pipeline_tasks/tasks.py:458-530) under the
-    DuckDB hash gate, not just pytest: the customer table is written into
-    an embedded Derby database, read back through ``read_jdbc_partitioned``
-    (one MIN/MAX bounds query fanning into 4 disjoint range scans — each
-    executor opens its own connection), and aggregated per market segment.
-    The oracle computes the same aggregate on the original parquet, so a
-    green row proves the partitioned JDBC scan returns exactly the stored
-    rows. The Derby scratch dir lives under /tmp and is not reused."""
-    import tempfile
-
-    from baskerville_spark.gates.registry import read_jdbc_partitioned
-
-    derby = {"driver": "org.apache.derby.jdbc.EmbeddedDriver"}
-    cust = _t(spark, sf_dir, "customer").select(
-        "c_custkey", "c_mktsegment", F.col("c_acctbal").cast("double").alias("c_acctbal")
-    )
-    tmp = tempfile.mkdtemp(prefix="q47_derby_")
-    url = f"jdbc:derby:{tmp}/db;create=true"
-    (
-        cust.write.format("jdbc")
-        .option("url", url)
-        .option("dbtable", "customer_jdbc")
-        .options(**derby)
-        .save()
-    )
-    df = read_jdbc_partitioned(
-        spark, url, "customer_jdbc", partition_col="c_custkey", num_partitions=4, **derby
-    )
-    # _gate_tmp_detach (defined below, resolved at call time): persist the
-    # tiny aggregate, then drop the embedded-Derby workspace — the frame
-    # would otherwise re-query the deleted database on later actions
-    return _gate_tmp_detach(
-        df.groupBy(F.col("c_mktsegment").alias("mktsegment"))
-        .agg(
-            F.count(F.lit(1)).alias("n_cust"),
-            F.round(F.sum("c_acctbal"), 2).alias("sum_acctbal"),
-        ),
-        tmp,
-    )
-
-
-_Q47_SQL = """
-SELECT c_mktsegment AS mktsegment, COUNT(*) AS n_cust,
-       ROUND(CAST(SUM(c_acctbal) AS DOUBLE), 2) AS sum_acctbal
-FROM customer GROUP BY c_mktsegment
-"""
-
-
-# ---------------------------------------------------------------------------
-# Q49/Q50 — schema-enforcement funnel and declared-pattern checks under the
-#           hash gate (checks/schema_check.py was pytest-only before)
-# ---------------------------------------------------------------------------
-
-def q49_schema_enforce(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The full ``enforce_schema`` funnel (add-missing → fill-defaults →
-    drop-if-missing; reference log_parsers.py:173-250) under the hash gate.
-    Fixture plants deterministic holes in documents: text NULLed for
-    doc_id ≡ 0 (mod 19) — those rows must be DROPPED; lang NULLed for
-    doc_id ≡ 0 (mod 13) — those must be FILLED with 'und'; and the spec
-    requires an absent ``ingest_flag`` int column — added as lit(1) for
-    every surviving row. The per-lang aggregate pins all three behaviors:
-    fill shows up as the 'und' group, drop as the missing mod-19 rows in
-    every count, add-missing as n_flag == n_docs."""
-    from baskerville_spark.gates.schema_check import ColumnSpec, enforce_schema
-
-    d = _t(spark, sf_dir, "documents").select(
-        "doc_id",
-        F.when(F.col("doc_id") % 19 == 0, F.lit(None)).otherwise(F.col("text")).alias("text"),
-        F.when(F.col("doc_id") % 13 == 0, F.lit(None)).otherwise(F.col("lang")).alias("lang"),
-        "n_chars",
-    )
-    specs = [
-        ColumnSpec("lang", default="und"),
-        ColumnSpec("text", drop_if_missing=True),
-        ColumnSpec("ingest_flag", dtype="int", required=True, default=1),
-    ]
-    return (
-        enforce_schema(d, specs)
-        .groupBy("lang")
-        .agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.sum("n_chars").alias("sum_chars"),
-            F.sum("ingest_flag").alias("n_flag"),
-        )
-    )
-
-
-_Q49_SQL = """
-WITH d AS (
-  SELECT doc_id,
-         CASE WHEN doc_id % 19 = 0 THEN NULL ELSE text END AS text,
-         CASE WHEN doc_id % 13 = 0 THEN NULL ELSE lang END AS lang,
-         n_chars
-  FROM documents),
-f AS (
-  SELECT COALESCE(lang, 'und') AS lang, n_chars, 1 AS ingest_flag
-  FROM d WHERE text IS NOT NULL)
-SELECT lang, COUNT(*) AS n_docs, CAST(SUM(n_chars) AS BIGINT) AS sum_chars,
-       CAST(SUM(ingest_flag) AS BIGINT) AS n_flag
-FROM f GROUP BY lang
-"""
-
-
-# ---------------------------------------------------------------------------
-# Q62 — incremental feature-cache loop == one-shot batch (client pipeline,
-#       reference client_pipeline.py:37-48 / base_spark.py:803-867 /
-#       request_set_cache.py:62-97)
-# ---------------------------------------------------------------------------
-
-def q62_feature_loop(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The client-pipeline loop END-TO-END under the hash gate: events split
-    into three deterministic micro-batches (event_id mod 3), streamed
-    file-per-trigger through ``run_feature_loop`` (GenerateFeatures →
-    merge-with-cache → atomic republish, runtime/feature_loop.py), and the
-    FINAL cache must hash-equal a one-shot SQL computation over all events.
-
-    This is the strongest claim about the merge algebra: q58 grades ONE
-    merge step against closed form; this grades the whole loop — three
-    groupBys, two update_feature_vector merges (textbook pooled variance,
-    the exactness invariant refresh_feature_cache documents), untouched-key
-    passthrough, and the versioned-pointer StateStore — against DuckDB
-    aggregating the undivided table. Any loss, duplication, or pooling
-    error in any batch breaks the hash. round(4)+float32 on both engines
-    absorbs summation-order ulp noise exactly as q57/q58 do.
-
-    The cache's pooled-mean column is NOT in the hashed row: the
-    testdata's 2-dp values make many true means terminate exactly ON a
-    4-dp rounding boundary (58.555750 = 4684.46/80; 55.683750 =
-    3118.29/56), where engines legitimately disagree by one final digit
-    (HALF_UP over the double's exact decimal vs scaled-double rounding).
-    The mean is fully determined by (value_total, request_total), both
-    hashed exactly, so omitting the division loses nothing; the pooled
-    mean still gates the hash through the variance pool (its new_mean
-    term) and is directly graded by q58.
-    """
-    import os
-    import tempfile
-
-    from baskerville_spark.gates.features import UpdateSpec
-    from baskerville_spark.gates.feature_loop import run_feature_loop
-    from baskerville_spark.gates.state import StateStore
-
-    e = _t(spark, sf_dir, "events")
-    tmp = tempfile.mkdtemp(prefix="bsk_q62_")
-    src = f"{tmp}/src"
-    _split_events_mod3(e, src)
-
-    def vector_fn(batch: DataFrame) -> DataFrame:
-        return batch.groupBy("user_id").agg(
-            F.count(F.lit(1)).cast("double").alias("request_total"),
-            F.sum("value").alias("value_total"),
-            F.max("value").alias("value_max"),
-            F.min("value").alias("value_min"),
-            F.avg("value").alias("value_avg"),
-            # var_samp of a 1-row group is NULL; 0.0 keeps the pooled
-            # algebra exact ((cn-1)*cv -> 0 either way)
-            F.coalesce(F.var_samp("value"), F.lit(0.0)).alias("value_var"),
-        )
-
-    specs = [
-        UpdateSpec("request_total", "total", ("request_total",)),
-        UpdateSpec("value_total", "total", ("value_total",)),
-        UpdateSpec("value_max", "maximum", ("value_max",)),
-        UpdateSpec("value_min", "minimum", ("value_min",)),
-        UpdateSpec("value_avg", "mean", ("value_avg", "request_total")),
-        UpdateSpec(
-            "value_var", "variance", ("value_var", "request_total", "value_avg")
-        ),
-    ]
-    store = StateStore(f"{tmp}/cache")
-    with _stream_shuffle(spark):
-        q = run_feature_loop(
-            spark,
-            src,
-            spark.read.parquet(src).schema,
-            store,
-            ["user_id"],
-            specs,
-            vector_fn,
-            checkpoint_dir=f"{tmp}/ckpt",
-        )
-        q.awaitTermination()
-    n_versions = len(
-        [d for d in os.listdir(store.root) if d.startswith("v_")]
-    )
-    if n_versions < 3:  # one republish per micro-batch, else not incremental
-        raise RuntimeError(f"expected >=3 cache versions, got {n_versions}")
-
-    final = store.read(spark)
-    return _gate_tmp_detach(final.select(
-        "user_id",
-        F.col("request_total").cast("long").alias("request_total"),
-        *[
-            F.round(F.col(c), 4).cast("float").alias(c)
-            for c in ("value_total", "value_max", "value_min", "value_var")
-        ],
-    ), tmp)
-
-
-_Q62_SQL = """
-SELECT user_id,
-       CAST(COUNT(*) AS BIGINT) AS request_total,
-       CAST(ROUND(SUM(value), 4) AS REAL) AS value_total,
-       CAST(ROUND(MAX(value), 4) AS REAL) AS value_max,
-       CAST(ROUND(MIN(value), 4) AS REAL) AS value_min,
-       CAST(ROUND(COALESCE(VAR_SAMP(value), 0), 4) AS REAL) AS value_var
-FROM events GROUP BY user_id
-"""
-
-
-# ---------------------------------------------------------------------------
-# Q63 — sensitive-data split / lagging re-merge (CacheSensitiveData →
-#       MergeWithSensitiveData, tasks.py:1291-1428)
-# ---------------------------------------------------------------------------
-
-def q63_sensitive_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The privacy split under the hash gate: events are split into two
-    micro-batches (event_id parity); each batch's sensitive columns
-    (user_id, props) are stashed in the versioned StateStore and the
-    prediction leg sees ONLY the anonymized frame. Batch 1's predictions
-    merge back AFTER batch 2 has been stashed — the reference's
-    predictions-lag-the-stash scenario (tasks.py:1411-1420) — so the gate
-    fails unless the stash ACCUMULATES per key across batches (the Redis
-    SET-per-uuid semantics) instead of being replaced by the newest write.
-    MergeReport.lost must be 0 for both legs (raised, not logged), the
-    anonymized frames must provably not carry the sensitive columns, and
-    the restored rows — key, prediction, and the exact sensitive strings —
-    must hash-equal DuckDB computing the same over the undivided table.
-    """
-    import tempfile
-
-    from baskerville_spark.gates.sensitive import (
-        cache_sensitive,
-        merge_sensitive,
-    )
-    from baskerville_spark.gates.state import StateStore
-
-    e = _t(spark, sf_dir, "events")
-    sensitive_cols = ["user_id", "props"]
-    tmp = tempfile.mkdtemp(prefix="bsk_q63_")
-    store = StateStore(f"{tmp}/stash")
-    b1 = e.where(F.col("event_id") % 2 == 0)
-    b2 = e.where(F.col("event_id") % 2 == 1)
-    anon1 = cache_sensitive(b1, store, ["event_id"], sensitive_cols)
-    # batch 2 lands in the stash BEFORE batch 1's predictions return
-    anon2 = cache_sensitive(b2, store, ["event_id"], sensitive_cols)
-    for anon in (anon1, anon2):
-        leaked = set(anon.columns) & set(sensitive_cols)
-        if leaked:  # the anonymized leg must never carry sensitive columns
-            raise RuntimeError(f"sensitive columns leaked: {leaked}")
-
-    def predict(anon: DataFrame) -> DataFrame:
-        return anon.select(
-            "event_id",
-            F.when(F.col("event_type") == "error", 1)
-            .otherwise(0).cast("int").alias("prediction"),
-        )
-
-    out = []
-    for anon in (anon1, anon2):
-        merged, rep = merge_sensitive(predict(anon), store, spark, ["event_id"])
-        if rep.lost != 0:  # reference logs this; we fail loudly
-            raise RuntimeError(f"merge lost {rep.lost} prediction rows")
-        out.append(merged.select("event_id", "prediction", *sensitive_cols))
-    return _gate_tmp_detach(out[0].unionByName(out[1]), tmp)
-
-
-_Q63_SQL = """
-SELECT event_id,
-       CAST(CASE WHEN event_type = 'error' THEN 1 ELSE 0 END AS INTEGER)
-         AS prediction,
-       user_id, props
-FROM events
-"""
-
-
-# ---------------------------------------------------------------------------
-# Q64 — stateful streaming stats (applyInPandasWithState; the reference's
-#       two-layer request-set cache, request_set_cache.py:318-434, as a
-#       native stateful operator)
-# ---------------------------------------------------------------------------
-
-def q64_stateful_stream_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """`incremental_group_stats` under the hash gate: events stream in as
-    three micro-batches (event_id mod 3, one file per trigger) through the
-    applyInPandasWithState operator; each key's FINAL emission must carry
-    lifetime stats identical to DuckDB aggregating the undivided table.
-
-    n_batches (the reference's subset_count, base_spark.py:849-852) is also
-    hashed — closed form: COUNT(DISTINCT event_id % 3) per user. The mean
-    is not hashed directly (2-dp data parks true means on rounding-boundary
-    ties — see q62); the sum it encodes is recovered as mean·n and rounded
-    where it is boundary-safe. min/max are exact doubles on both sides.
-    """
-    import tempfile
-
-    from baskerville_spark.gates.stateful import incremental_group_stats
-
-    e = _t(spark, sf_dir, "events")
-    # PRECONDITION for the sum recovery below: mean_value divides by the
-    # NON-NULL count (nv) while n_total counts all rows, so
-    # mean*n_total == SUM(value) only when the column is null-free —
-    # fail loudly instead of hash-mismatching mysteriously
-    if e.where(F.col("value").isNull()).limit(1).count() > 0:
-        raise RuntimeError(
-            "q64 requires a null-free value column (value_sum = mean*n_total)"
-        )
-    tmp = tempfile.mkdtemp(prefix="bsk_q64_")
-    src = f"{tmp}/src"
-    _split_events_mod3(e.select("event_id", "user_id", "value"), src)
-    stream = (
-        spark.readStream.schema("user_id long, value double")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    out = incremental_group_stats(stream, key_col="user_id")
-    rows = _drain_to_memory(spark, out, "update", "q64")
-    import shutil
-
-    shutil.rmtree(tmp, ignore_errors=True)  # result lives in the memory sink
-    w = Window.partitionBy("key").orderBy(
-        F.desc("n_batches"), F.desc("n_total")
-    )
-    last = rows.withColumn("rn", F.row_number().over(w)).where("rn = 1")
-    if last.where("n_batches < 2").limit(1).count() > 0:
-        # every sf tier has >=7 rows per (user, batch): a key that never
-        # merged across batches means the stream didn't micro-batch
-        raise RuntimeError("a key saw fewer than 2 micro-batches")
-    return last.select(
-        "key",
-        "n_total",
-        "n_batches",
-        "min_value",
-        "max_value",
-        F.round(F.col("mean_value") * F.col("n_total"), 4)
-        .cast("float")
-        .alias("value_sum"),
-    )
-
-
-_Q64_SQL = """
-SELECT CAST(user_id AS VARCHAR) AS key,
-       CAST(COUNT(*) AS BIGINT) AS n_total,
-       CAST(COUNT(DISTINCT event_id % 3) AS BIGINT) AS n_batches,
-       MIN(value) AS min_value,
-       MAX(value) AS max_value,
-       CAST(ROUND(SUM(value), 4) AS REAL) AS value_sum
-FROM events GROUP BY user_id
-"""
-
-
-# --------------------------------------------------------------------------
-# q74/q75: metadata-consistency checks over a CLOSED-FORM clip-metadata table
-# (every column is pure mod arithmetic on the row index, so DuckDB rebuilds
-# the identical table from generate_series — the q21 oracle pattern without
-# the rng-dependent columns).
-# --------------------------------------------------------------------------
-
-_META_N = 2000  # 4 partitions x 500 rows
-
-
-def _meta_clips(spark: SparkSession):
-    """Closed-form clip-metadata table: (clip_id, byte_len, sr_hz, dur_ms,
-    codec, transcript, part_id). dur_ms NULL on i%23==11 (non-checkable
-    path); pcm byte_len corrupted on i%41==3; flac/opus byte_len arbitrary
-    (no fixed-rate contract)."""
-    i = F.col("id")
-    sr = F.element_at(
-        F.array(*[F.lit(x) for x in (8000, 16000, 22050, 44100, 48000)]),
-        ((i % 5) + 1).cast("int"),
-    )
-    true_dur = (F.lit(100) + (i * 37) % 900).cast("int")
-    dur = F.when(i % 23 == 11, F.lit(None).cast("int")).otherwise(true_dur)
-    codec = (
-        F.when(i % 7 == 0, F.lit("flac"))
-        .when(i % 7 == 3, F.lit("opus"))
-        .otherwise(F.lit("pcm_s16le"))
-    )
-    expected = (F.floor(sr.cast("bigint") * true_dur / F.lit(1000)) * 2).cast("bigint")
-    corrupt = F.when(i % 41 == 3, (i % 89) + 1).otherwise(F.lit(0)).cast("bigint")
-    byte_len = F.when(codec == "pcm_s16le", expected + corrupt).otherwise(
-        F.lit(50) + (i % 1000)
-    )
-    n_chars = (F.lit(5) + (i * 13) % 80).cast("int")
-    return spark.range(_META_N).select(
-        F.format_string("clip_%012d", i).alias("clip_id"),
-        byte_len.cast("bigint").alias("byte_len"),
-        sr.cast("int").alias("sr_hz"),
-        dur.alias("dur_ms"),
-        codec.alias("codec"),
-        F.expr("repeat('a', 5 + cast((id*13) % 80 as int))").alias("transcript"),
-        F.floor(i / F.lit(500)).cast("int").alias("part_id"),
-        n_chars.alias("n_chars"),
-    )
-
-
-_META_CTE = f"""
-WITH idx AS (SELECT unnest(generate_series(0, {_META_N - 1})) AS i),
-m AS (
-  SELECT
-    printf('clip_%012d', i) AS clip_id,
-    CAST([8000,16000,22050,44100,48000][CAST(i % 5 AS INT) + 1] AS BIGINT) AS sr_hz,
-    CAST(100 + (i*37) % 900 AS BIGINT) AS true_dur,
-    CASE WHEN i % 23 = 11 THEN NULL ELSE CAST(100 + (i*37) % 900 AS BIGINT) END AS dur_ms,
-    CASE WHEN i % 7 = 0 THEN 'flac' WHEN i % 7 = 3 THEN 'opus'
-         ELSE 'pcm_s16le' END AS codec,
-    CAST(5 + (i*13) % 80 AS BIGINT) AS n_chars,
-    CAST(i // 500 AS INT) AS part_id,
-    i
-  FROM idx),
-meta AS (
-  SELECT clip_id, sr_hz, dur_ms, codec, n_chars, part_id,
-    CASE WHEN codec = 'pcm_s16le'
-         THEN (sr_hz * true_dur) // 1000 * 2
-              + (CASE WHEN i % 41 = 3 THEN (i % 89) + 1 ELSE 0 END)
-         ELSE 50 + (i % 1000) END AS byte_len
-  FROM m)
-"""
-
-
-def q74_payload_bytes(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Payload byte-length consistency (validation tier): fixed-rate codecs
-    must satisfy len(bytes) == floor(sr*dur/1000)*bytes_per_sample; catches
-    truncated uploads / lying headers without decoding. Pure Column
-    arithmetic over the metadata projection — no payload scan, one filter,
-    no shuffle (the violations listing is a map-side projection)."""
-    from baskerville_spark.gates.consistency import payload_byte_violations
-
-    return payload_byte_violations(_meta_clips(spark))
-
-
-_Q74_SQL = _META_CTE + """
-SELECT part_id, clip_id, 'payload_bytes' AS check_name,
-       byte_len,
-       (sr_hz * dur_ms) // 1000 * 2 AS expected_bytes
-FROM meta
-WHERE codec = 'pcm_s16le' AND dur_ms IS NOT NULL
-  AND byte_len <> (sr_hz * dur_ms) // 1000 * 2
-"""
-
-
-def q75_speaking_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Speaking-rate plausibility verdicts: transcript chars/sec outside
-    [20, 200] fails the partition (the cheap transcript-audio alignment
-    screen run before any ASR verify). ONE conditional-sum aggregate keyed
-    on part_id — verdict shape, exercising the verdicts path of
-    checks/consistency.py under the oracle (q74 covers the listing path)."""
-    from baskerville_spark.gates.consistency import speaking_rate_verdicts
-
-    v = speaking_rate_verdicts(_meta_clips(spark))
-    return v.select(
-        "part_id",
-        "check_name",
-        F.col("passed").cast("int").alias("passed"),
-        F.round("metric_value", 6).alias("violation_rate"),
-        "n_rows",
-        "n_violations",
-    )
-
-
-_Q75_SQL = _META_CTE + """
-, flags AS (
-  SELECT part_id,
-         (dur_ms IS NOT NULL) AS checkable,
-         (dur_ms IS NOT NULL AND
-          (n_chars / (dur_ms / 1000.0) < 20.0
-           OR n_chars / (dur_ms / 1000.0) > 200.0)) AS violated
-  FROM meta)
-SELECT part_id, 'speaking_rate' AS check_name,
-       CAST(SUM(CASE WHEN violated THEN 1 ELSE 0 END) = 0 AS INT) AS passed,
-       ROUND(SUM(CASE WHEN violated THEN 1 ELSE 0 END)
-             / greatest(SUM(CASE WHEN checkable THEN 1 ELSE 0 END), 1) * 1.0,
-             6) AS violation_rate,
-       CAST(SUM(CASE WHEN checkable THEN 1 ELSE 0 END) AS BIGINT) AS n_rows,
-       CAST(SUM(CASE WHEN violated THEN 1 ELSE 0 END) AS BIGINT) AS n_violations
-FROM flags GROUP BY part_id
-"""
-
-
-# --------------------------------------------------------------------------
-# q94: snapshot content diff — which partitions changed between snapshots
-# --------------------------------------------------------------------------
-
-
-def q94_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Snapshot-diff gate: snapshot B is events with deterministic edits —
-    two users' rows dropped (changes their partitions), one user's error
-    values bumped (changes its partition), one whole partition dropped
-    (removed), one synthetic partition appended (added). The signature diff
-    (count + xor + modular-sum of full-row xxhash64, one agg pass per
-    snapshot) must classify every partition exactly as DuckDB's literal
-    multiset comparison does."""
-    from baskerville_spark.gates.snapshot import snapshot_diff
-
-    e = _t(spark, sf_dir, "events").select(
-        F.pmod(F.col("user_id"), F.lit(12)).cast("int").alias("part"),
-        "user_id",
-        "event_type",
-        "value",
-    )
-    a = e
-    bumped = (F.col("event_type") == "error") & (F.col("user_id") % 103 == 5)
-    b_mod = e.where(
-        (F.col("user_id") % 101 != 7) & (F.col("part") != 9)
-    ).withColumn(
-        "value", F.when(bumped, F.col("value") + 1).otherwise(F.col("value"))
-    )
-    b_new = e.where(F.col("user_id") % 97 == 11).withColumn(
-        "part", F.lit(12).cast("int")
-    )
-    b = b_mod.unionByName(b_new)
-    d = snapshot_diff(a, b, "part", hash_cols=["user_id", "event_type", "value"])
-    return d.select("partition", "status", "n_rows_a", "n_rows_b")
-
-
-_Q94_SQL = """
-WITH e AS (
-  SELECT CAST(user_id % 12 AS INT) AS part, user_id, event_type, value
-  FROM events),
-a AS (SELECT * FROM e),
-b AS (
-  SELECT part, user_id, event_type,
-         CASE WHEN event_type = 'error' AND user_id % 103 = 5
-              THEN value + 1 ELSE value END AS value
-  FROM e WHERE user_id % 101 <> 7 AND part <> 9
-  UNION ALL
-  SELECT CAST(12 AS INT) AS part, user_id, event_type, value
-  FROM e WHERE user_id % 97 = 11),
-u AS (
-  SELECT part, user_id, event_type, value, SUM(in_a) AS na, SUM(in_b) AS nb
-  FROM (
-    SELECT part, user_id, event_type, value, 1 AS in_a, 0 AS in_b FROM a
-    UNION ALL
-    SELECT part, user_id, event_type, value, 0 AS in_a, 1 AS in_b FROM b)
-  GROUP BY part, user_id, event_type, value),
-p AS (
-  SELECT part, SUM(na) AS tot_a, SUM(nb) AS tot_b,
-         SUM(CASE WHEN na <> nb THEN 1 ELSE 0 END) AS n_mismatch
-  FROM u GROUP BY part)
-SELECT part AS partition,
-       CASE WHEN tot_a = 0 THEN 'added'
-            WHEN tot_b = 0 THEN 'removed'
-            WHEN n_mismatch > 0 THEN 'changed'
-            ELSE 'unchanged' END AS status,
-       CASE WHEN tot_a = 0 THEN NULL ELSE CAST(tot_a AS BIGINT) END AS n_rows_a,
-       CASE WHEN tot_b = 0 THEN NULL ELSE CAST(tot_b AS BIGINT) END AS n_rows_b
-FROM p
-"""
-
-
-# --------------------------------------------------------------------------
-# q95: snapshot-diff-driven incremental revalidation (the 10^12-row story:
-# the table moved under a finished run; revalidate ONLY what changed)
-# --------------------------------------------------------------------------
-
-
-def q95_incremental_revalidation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Protocol gate composing snapshot_diff with the resumable runtime.
-
-    Snapshot A (1000 rows x 4 parts) is fully validated. Snapshot B is the
-    generator's output for 1250 rows x 5 parts — by the generator's
-    contiguous block partitioning, parts 0-2 are row-identical to A, part 3
-    changes (the drift flag moves from part 3 to the new last part), and
-    part 4 is new. The protocol:
-      1. full run over A (manifest marks 0-3),
-      2. snapshot_diff(A, B) -> revalidate exactly [3 changed, 4 added],
-      3. invalidate part 3's manifest mark, run_resumable over B ->
-         processes exactly [3, 4], dynamic partition overwrite replaces
-         part 3's stale verdicts,
-      4. idempotence: a third run finds nothing pending.
-    The combined verdict grid (parts 0-2 from run A + 3-4 from run B) must
-    equal the from-scratch closed-form oracle for snapshot B — incremental
-    revalidation loses nothing, duplicates nothing, and never re-reads the
-    unchanged 3/5 of the table (the diff itself is one narrow signature
-    agg per snapshot; no payload ever shuffles)."""
-    import tempfile
-
-    from baskerville_spark.gates.snapshot import partitions_to_revalidate
-    from baskerville_spark.generator import GenConfig
-    from baskerville_spark.runtime import manifest as manifest_mod
-    from baskerville_spark.runtime.runner import ValidationConfig, run_resumable
-
-    cfg_a = GenConfig(n_rows=1000, n_parts=4)
-    cfg_b = GenConfig(n_rows=1250, n_parts=5)
-    tmp = tempfile.mkdtemp(prefix="bsk_q95_")
-    # both snapshots are session-shared read-only fixtures (A is the same
-    # table q21/q61 validate); manifest/out stay private to this gate
-    a_p, tref_a = _shared_clip_fixture(spark, cfg_a)
-    b_p, tref_b = _shared_clip_fixture(spark, cfg_b)
-    man_p, out_p = f"{tmp}/manifest", f"{tmp}/out"
-
-    run_a = run_resumable(spark, a_p, man_p, out_p, tref_a,
-                          cfg=ValidationConfig())
-    if run_a != [0, 1, 2, 3]:
-        raise RuntimeError(f"run A expected [0, 1, 2, 3], got {run_a}")
-
-    hash_cols = ["clip_id", "bytes", "sr_hz", "dur_ms", "codec", "transcript"]
-    affected = partitions_to_revalidate(
-        spark.read.parquet(a_p), spark.read.parquet(b_p), "part_id", hash_cols
-    )
-    if affected != [3, 4]:
-        raise RuntimeError(f"diff expected [3, 4], got {affected}")
-
-    manifest_mod.invalidate_partitions(man_p, affected)
-    run_b = run_resumable(spark, b_p, man_p, out_p, tref_b,
-                          cfg=ValidationConfig())
-    if run_b != [3, 4]:
-        raise RuntimeError(f"run B expected [3, 4], got {run_b}")
-    run_c = run_resumable(spark, b_p, man_p, out_p, tref_b,
-                          cfg=ValidationConfig())
-    if run_c:
-        raise RuntimeError(f"run C expected [], got {run_c}")
-
-    verdicts = spark.read.parquet(f"{out_p}/verdicts")
-    return _gate_tmp_detach(_verdict_grid(verdicts), tmp)
-
-
-def _q95_sql() -> str:
-    return _q21_sql(n_rows=1250, n_parts=5)
-
-
-# --------------------------------------------------------------------------
-# q101/q102: data-layout operators — min/max file skipping, z-order values
-# --------------------------------------------------------------------------
-
-
-def q101_file_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """File-skipping gate: lineitem split into 50 synthetic 'files'
-    (l_orderkey mod 50), per-file min/max(l_extendedprice) stats, then the
-    skip/scan plan for BETWEEN 20000 AND 30000 — with the SOUNDNESS
-    invariant in the result: every file's actual in-range match count
-    rides along, and a skipped file must show zero (the oracle recomputes
-    stats, plan, and counts from the raw rows)."""
-    from baskerville_spark.gates.layout import file_skip_plan
-
-    lo, hi = 20000.0, 30000.0
-    li = _t(spark, sf_dir, "lineitem")
-    stats = li.groupBy((F.col("l_orderkey") % 50).alias("file_id")).agg(
-        F.min("l_extendedprice").alias("min_v"),
-        F.max("l_extendedprice").alias("max_v"),
-        F.count(F.lit(1)).alias("n_rows"),
-        F.sum(
-            F.col("l_extendedprice").between(lo, hi).cast("long")
-        ).alias("n_matching"),
-    )
-    plan = file_skip_plan(stats, lo, hi)
-    return plan.select(
-        "file_id",
-        "action",
-        "reason",
-        "n_rows",
-        "n_matching",
-        ((F.col("action") == "scan") | (F.col("n_matching") == 0)).alias("sound"),
-    )
-
-
-_Q101_SQL = """
-WITH s AS (
-  SELECT l_orderkey % 50 AS file_id,
-         MIN(l_extendedprice) AS min_v,
-         MAX(l_extendedprice) AS max_v,
-         COUNT(*) AS n_rows,
-         SUM(CASE WHEN l_extendedprice BETWEEN 20000 AND 30000
-                  THEN 1 ELSE 0 END) AS n_matching
-  FROM lineitem GROUP BY 1)
-SELECT file_id,
-       CASE WHEN max_v < 20000 OR min_v > 30000 THEN 'skip'
-            ELSE 'scan' END AS action,
-       CASE WHEN max_v < 20000 THEN 'entirely_below'
-            WHEN min_v > 30000 THEN 'entirely_above'
-            ELSE 'overlaps' END AS reason,
-       CAST(n_rows AS BIGINT) AS n_rows,
-       CAST(n_matching AS BIGINT) AS n_matching,
-       (NOT (max_v < 20000 OR min_v > 30000)) OR n_matching = 0 AS sound
-FROM s
-"""
-
-
-def q102_zorder(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Z-order gate: interleaved-bits z-values over two bucketed customer
-    dimensions (custkey mod 256, nationkey — both < 2^8), plus the
-    per-z-octant counts a range repartition would use. The oracle rebuilds
-    the interleave with the same shift/AND arithmetic in SQL — bit-exact,
-    and the octant histogram pins the clustering behavior, not just the
-    per-row math."""
-    from baskerville_spark.gates.layout import z_value
-
-    c = _t(spark, sf_dir, "customer")
-    z = z_value(F.col("c_custkey") % 256, F.col("c_nationkey"))
-    return c.select(
-        "c_custkey",
-        z.alias("z"),
-        F.shiftright(z, 13).alias("z_octant"),
-    )
-
-
-_Q102_SQL = """
-SELECT c_custkey,
-       CAST({z} AS BIGINT) AS z,
-       CAST({z} AS BIGINT) >> 13 AS z_octant
-FROM customer
-""".format(
-    z=" + ".join(
-        f"((((c_custkey % 256) >> {i}) & 1) << {2 * i})"
-        f" + (((c_nationkey >> {i}) & 1) << {2 * i + 1})"
-        for i in range(8)
-    )
-)
-
-
-# --------------------------------------------------------------------------
-# q103: small-file compaction planning (Iceberg maintenance shape)
-# --------------------------------------------------------------------------
-
-
-def q103_compaction_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Compaction-plan gate: lineitem as a 7-partition × ~50-file layout
-    with synthetic per-file byte sizes (row count × 100, every 9th file
-    ×100 bigger — the planted 'already big' files that must come out with
-    a NULL group). The contiguous prefix-sum grouping must match DuckDB's
-    window-cumsum restatement exactly, per partition."""
-    from baskerville_spark.gates.layout import plan_compaction
-
-    li = _t(spark, sf_dir, "lineitem")
-    files = li.groupBy(
-        (F.col("l_orderkey") % 7).alias("partition"),
-        (F.col("l_orderkey") % 50).alias("file_id"),
-    ).agg(
-        (
-            F.count(F.lit(1))
-            * F.when(F.col("file_id") % 9 == 0, 10000).otherwise(100)
-        ).alias("bytes")
-    )
-    plan = plan_compaction(files, target_bytes=40_000)
-    return plan.select(
-        "partition", "file_id", "bytes", "is_small", "compaction_group"
-    )
-
-
-_Q103_SQL = """
-WITH f AS (
-  SELECT l_orderkey % 7 AS partition, l_orderkey % 50 AS file_id,
-         COUNT(*) * (CASE WHEN (l_orderkey % 50) % 9 = 0
-                          THEN 10000 ELSE 100 END) AS bytes
-  FROM lineitem GROUP BY 1, 2),
-p AS (
-  SELECT partition, file_id, bytes,
-         (bytes < 40000) AS is_small,
-         COALESCE(SUM(CASE WHEN bytes < 40000 THEN bytes END) OVER (
-             PARTITION BY partition ORDER BY file_id
-             ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS before_b
-  FROM f)
-SELECT partition, file_id, CAST(bytes AS BIGINT) AS bytes, is_small,
-       CASE WHEN is_small
-            THEN CAST(before_b // 40000 AS BIGINT) END AS compaction_group
-FROM p
-"""
-
-
-# --------------------------------------------------------------------------
-# q108: enrich-with-state left-outer + per-column coalesce (the last §2.3
-# join family that was pytest-only — VERDICT r04 item #5)
-# --------------------------------------------------------------------------
-
-
-def q108_enrich_with_state(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """State-enrichment gate (reference request_set_cache.py:207-251): the
-    batch (per-user aggregates over odd event_ids) is LEFT-joined to a
-    planted STALE cache (per-user aggregates over even event_ids, with
-    every user_id % 3 == 0 evicted so the NULL-state path is exercised),
-    state columns arriving old_*-prefixed, then the canonical per-column
-    coalesce folds prior state into running totals. Hash-gates both the
-    join's null semantics and the coalesce arithmetic."""
-    from baskerville_spark.gates.state import enrich_with_state
-
-    ev = _t(spark, sf_dir, "events")
-    batch = (
-        ev.where(F.col("event_id") % 2 == 1)
-        .groupBy("user_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.round(F.sum("value"), 6).alias("sum_value"),
-        )
-    )
-    stale = (
-        ev.where((F.col("event_id") % 2 == 0) & (F.col("user_id") % 3 != 0))
-        .groupBy("user_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.round(F.sum("value"), 6).alias("sum_value"),
-        )
-    )
-    enriched = enrich_with_state(
-        batch, stale, keys=["user_id"], state_cols=["n_events", "sum_value"]
-    )
-    return enriched.select(
-        "user_id",
-        "n_events",
-        "old_n_events",
-        (F.col("n_events") + F.coalesce(F.col("old_n_events"), F.lit(0)))
-        .cast("long")
-        .alias("total_events"),
-        F.round(
-            F.col("sum_value") + F.coalesce(F.col("old_sum_value"), F.lit(0.0)), 6
-        ).alias("total_value"),
-    )
-
-
-_Q108_SQL = """
-WITH batch AS (
-  SELECT user_id, COUNT(*) AS n_events,
-         ROUND(SUM(value), 6) AS sum_value
-  FROM events WHERE event_id % 2 = 1 GROUP BY user_id),
-stale AS (
-  SELECT user_id, COUNT(*) AS n_events,
-         ROUND(SUM(value), 6) AS sum_value
-  FROM events WHERE event_id % 2 = 0 AND user_id % 3 <> 0 GROUP BY user_id)
-SELECT b.user_id,
-       b.n_events,
-       s.n_events AS old_n_events,
-       CAST(b.n_events + COALESCE(s.n_events, 0) AS BIGINT) AS total_events,
-       ROUND(b.sum_value + COALESCE(s.sum_value, 0.0), 6) AS total_value
-FROM batch b LEFT JOIN stale s USING (user_id)
-"""
-
-
-# --------------------------------------------------------------------------
-# q110: field-level AES-GCM crypto on sensitive columns (reference
-# util/crypto.py:17-72 via baskerville_tools.py:67-84) — Spark-native
-# aes_encrypt/aes_decrypt, gated through the decrypt∘encrypt identity plus
-# the GCM wire-shape (iv12‖ct‖tag16) and an AAD-tamper probe.
-# --------------------------------------------------------------------------
-
-_Q110_KEY = "0123456789abcdef0123456789abcdef"  # 32-byte AES-256 test key
-
-
-def q110_sensitive_crypto(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Crypto gate: a stand-in sensitive string per event is AES-GCM
-    encrypted bound to its event_id (AAD), then (a) decrypted back —
-    identity under the hash; (b) length-checked against the GCM wire shape
-    iv(12)‖ct(len)‖tag(16) — deterministic though the IV is random;
-    (c) tamper-probed — permissive decrypt under a DIFFERENT AAD must
-    yield NULL (ciphertexts cannot be replayed onto other rows)."""
-    from baskerville_spark.gates.sensitive import (
-        decrypt_columns,
-        encrypt_columns,
-    )
-
-    ev = (
-        _t(spark, sf_dir, "events")
-        .where(F.col("event_id") % 20 == 0)
-        .select(
-            "event_id",
-            F.concat(F.lit("ip-10-0-"), F.col("user_id")).alias("secret"),
-        )
-    )
-    ev = ev.withColumn("__plain_len", F.octet_length("secret"))
-    enc = encrypt_columns(ev, ["secret"], _Q110_KEY, aad_col="event_id")
-    # GCM wire shape: iv(12) ‖ ciphertext(len(plain)) ‖ tag(16)
-    enc = enc.withColumn(
-        "len_ok", F.octet_length("secret") == F.col("__plain_len") + 28
-    )
-    # both decrypts ride the SAME linear plan (a second column, not a
-    # self-join): one scan, zero shuffles, whole-stage codegen end to end
-    enc = enc.withColumn(
-        "secret_tampered", F.col("secret")
-    ).withColumn("__wrong_aad", F.concat(F.lit("x"), "event_id"))
-    enc = decrypt_columns(
-        enc, ["secret_tampered"], _Q110_KEY,
-        aad_col="__wrong_aad", permissive=True,
-    )
-    dec = decrypt_columns(enc, ["secret"], _Q110_KEY, aad_col="event_id")
-    return dec.select(
-        "event_id",
-        F.col("secret").alias("secret_roundtrip"),
-        "len_ok",
-        F.col("secret_tampered").isNull().alias("tamper_null"),
-    )
-
-
-_Q110_SQL = """
-SELECT event_id,
-       'ip-10-0-' || CAST(user_id AS VARCHAR) AS secret_roundtrip,
-       TRUE AS len_ok,
-       TRUE AS tamper_null
-FROM events
-WHERE event_id % 20 = 0
-"""
-
-
-# --------------------------------------------------------------------------
-# q112: gap-fill to a regular grid — forward fill WITHOUT a calendar join
-# (each observation explodes its own fill span off one lead() window).
-# --------------------------------------------------------------------------
-
-
-def q112_gap_fill(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Gap-fill gate: per-user 6-hour grid over the events table (slots =
-    epoch − epoch % 21600), latest-in-slot by event_id, gaps forward-filled
-    up to timegrid.MAX_FILL = 8 slots (longer gaps stay absent — bounded row
-    amplification under the hash). value AND event_type carry; is_observed
-    marks real vs filled rows."""
-    from baskerville_spark.gates.timegrid import gap_fill
-
-    step = 21600
-    ev = _t(spark, sf_dir, "events").select(
-        "user_id",
-        "event_id",
-        "value",
-        "event_type",
-        (
-            F.unix_timestamp(F.col("ts").cast("timestamp"))
-            - F.unix_timestamp(F.col("ts").cast("timestamp")) % step
-        ).alias("slot"),
-    )
-    return gap_fill(
-        ev,
-        keys=["user_id"],
-        slot_col="slot",
-        value_cols=["value", "event_type"],
-        step=step,
-        order_col="event_id",
-    )
-
-
-_Q112_SQL = """
-WITH b AS (
-  SELECT user_id, event_id, value, event_type,
-         CAST(floor(epoch(ts)) AS BIGINT)
-           - CAST(floor(epoch(ts)) AS BIGINT) % 21600 AS slot
-  FROM events),
-obs AS (
-  SELECT user_id, slot,
-         MAX_BY(value, event_id) AS value,
-         MAX_BY(event_type, event_id) AS event_type
-  FROM b GROUP BY user_id, slot),
-nx AS (
-  SELECT *, LEAD(slot) OVER (PARTITION BY user_id ORDER BY slot) AS nxt
-  FROM obs),
-sel AS (
-  SELECT user_id, value, event_type, slot,
-         unnest(generate_series(
-             slot,
-             LEAST(COALESCE(nxt - 21600, slot), slot + 8 * 21600),
-             21600)) AS grid_slot
-  FROM nx)
-SELECT user_id, grid_slot, value, event_type,
-       grid_slot = slot AS is_observed
-FROM sel
-"""
-
-
-# --------------------------------------------------------------------------
-# q124: schema-evolution compatibility — the metadata-plane validation the
-# reference never had (its schema is frozen SQLAlchemy DDL, db/models.py;
-# drift surfaces only when maintain_db or an insert crashes). The engine
-# classifies every column-level change between the validated snapshot's
-# schema and the current one by Iceberg's published evolution rules before
-# any data moves. Pure driver-side StructType algebra — the gate's cost is
-# identical at sf0.001 and 10^12 rows. The oracle is closed-form: the same
-# six planted changes, stated as VALUES.
-# --------------------------------------------------------------------------
-
-
-def q124_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Old = the documents table as validated. New = a plausibly-evolved
-    snapshot with six changes: doc_id narrowed bigint->int (breaking),
-    lang dropped (breaking), source retyped string->int hash bucket
-    (breaking), n_chars retyped bigint->double (breaking — long->double is
-    NOT an Iceberg-legal promotion), quality_score added optional (ok),
-    shard_key added required/non-null (breaking)."""
-    from baskerville_spark.gates.evolution import schema_evolution_df
-
-    old = _t(spark, sf_dir, "documents")
-    new = old.select(
-        F.col("doc_id").cast("int").alias("doc_id"),  # narrowed: BREAKING
-        "text",
-        # lang dropped: BREAKING
-        F.xxhash64("source").cast("int").alias("source"),  # retyped: BREAKING
-        F.col("n_chars").cast("double").alias("n_chars"),  # long->double: BREAKING
-        (F.col("n_chars") / 600.0).alias("quality_score"),  # added optional: ok
-        F.lit(7).alias("shard_key"),  # added non-nullable: BREAKING
-    )
-    return schema_evolution_df(spark, old, new)
-
-
-_Q124_SQL = """
-SELECT * FROM (VALUES
-  ('quality_score', 'added_optional', NULL,      'double', 1),
-  ('shard_key',     'added_required', NULL,      'int',    0),
-  ('lang',          'dropped',        'string',  NULL,     0),
-  ('doc_id',        'retyped',        'bigint',  'int',    0),
-  ('n_chars',       'retyped',        'bigint',  'double', 0),
-  ('source',        'retyped',        'string',  'int',    0)
-) AS t(column_name, change, from_type, to_type, compatible)
-"""
-
-
-# --------------------------------------------------------------------------
-# q125: partition completeness + freshness vs a baseline manifest — the
-# verification the reference's partition maintenance (temporal_partition.py
-# pre-creates partitions, database_maintenance.py:20 re-runs the generator)
-# never performs: did the data actually arrive? One narrow agg pass over
-# (day, ts) — payload pruned at the scan — joined to a broadcast manifest.
-# Planted: day 3 dropped (missing), day 5 thinned to ~25% vs a 50% floor
-# (row_count_low), day 7 truncated at 18:00 vs a 3 h staleness bound
-# (stale), day 29 absent from the manifest (unexpected).
-# --------------------------------------------------------------------------
-
-
-def q125_partition_completeness(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from baskerville_spark.gates.completeness import (
-        completeness_verdicts,
-        expected_from_snapshot,
-    )
-
-    e = (
-        _t(spark, sf_dir, "events")
-        .withColumn("ts", F.col("ts").cast("timestamp"))  # NTZ → event-time
-        .withColumn("day", F.dayofmonth("ts"))
-    )
-    expected = expected_from_snapshot(e.filter(F.col("day") != 29), "day", "ts")
-    cutoff = F.to_timestamp(F.lit("2024-01-07 18:00:00"))
-    current = e.filter(
-        (F.col("day") != 3)
-        & ((F.col("day") != 5) | (F.col("event_id") % 4 == 0))
-        & ((F.col("day") != 7) | (F.col("ts") < cutoff))
-    )
-    return completeness_verdicts(current, expected, "day", "ts")
-
-
-_Q125_SQL = """
-WITH e AS (
-  SELECT event_id, ts, CAST(day(ts) AS INT) AS day FROM events),
-expected AS (
-  SELECT day AS partition, CAST(COUNT(*) AS BIGINT) AS expected_rows,
-         MAX(ts) AS expected_max_ts
-  FROM e WHERE day <> 29 GROUP BY day),
-cur AS (
-  SELECT * FROM e
-  WHERE day <> 3
-    AND (day <> 5 OR event_id % 4 = 0)
-    AND (day <> 7 OR ts < TIMESTAMP '2024-01-07 18:00:00')),
-obs AS (
-  SELECT day AS partition, CAST(COUNT(*) AS BIGINT) AS n_rows,
-         MAX(ts) AS max_ts
-  FROM cur GROUP BY day)
-SELECT COALESCE(o.partition, x.partition) AS partition,
-       CAST(COALESCE(o.n_rows, 0) AS BIGINT) AS n_rows,
-       CAST(x.expected_rows AS BIGINT) AS expected_rows,
-       CASE WHEN x.partition IS NULL THEN 'unexpected_partition'
-            WHEN o.partition IS NULL THEN 'missing_partition'
-            WHEN o.n_rows < CEIL(x.expected_rows * 0.5) THEN 'row_count_low'
-            WHEN floor(epoch(x.expected_max_ts)) - floor(epoch(o.max_ts))
-                 > 10800 THEN 'stale_partition'
-            ELSE 'ok' END AS status
-FROM obs o FULL OUTER JOIN expected x ON o.partition = x.partition
-"""
-
-
-# --------------------------------------------------------------------------
-# q126: row-level snapshot diff drill-down — stage 2 of the incremental
-# story. q94 (snapshot_diff) finds WHICH partitions changed shuffling only
-# |partitions| signature rows; this gate drills into exactly those
-# partitions (changed_parts pushed into both scans → partition pruning
-# skips the settled 14/16 of the table) and emits per-KEY verdicts:
-# added / removed / modified. Only narrow (partition, key, xxhash64) rows
-# shuffle; output is bounded by the churn, not the table. Planted churn in
-# parts {2,5} only: event_id%11==3 removed, surviving event_id%7==0 get a
-# suffixed event_type (modified — event_type is non-null at every sf, so
-# the modification can never be a value-level no-op), part-2 event_id%13==1
-# re-keyed to -(event_id)-1 (added — negation can never collide with the
-# non-negative id domain at ANY scale factor, unlike a fixed offset). The
-# oracle derives the identical verdict set in closed form.
-# --------------------------------------------------------------------------
-
-
-def q126_row_level_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from baskerville_spark.gates.snapshot import row_level_diff
-
-    e = _t(spark, sf_dir, "events").withColumn(
-        "part", F.pmod(F.col("user_id"), F.lit(16)).cast("int")
-    )
-    scoped = F.col("part").isin(2, 5)
-    b = (
-        e.filter(~(scoped & (F.col("event_id") % 11 == 3)))
-        .withColumn(
-            "event_type",
-            F.when(
-                scoped & (F.col("event_id") % 7 == 0),
-                F.concat(F.col("event_type"), F.lit("_X")),
-            ).otherwise(F.col("event_type")),
-        )
-        .unionByName(
-            e.filter((F.col("part") == 2) & (F.col("event_id") % 13 == 1))
-            .withColumn("event_id", -F.col("event_id") - F.lit(1))
-        )
-    )
-    return row_level_diff(
-        e, b, "part", ["event_id"], changed_parts=[2, 5]
-    )
-
-
-_Q126_SQL = """
-WITH e AS (
-  SELECT CAST(user_id % 16 AS INT) AS part, event_id FROM events),
-scoped AS (SELECT * FROM e WHERE part IN (2, 5))
-SELECT part AS partition, CAST(event_id AS BIGINT) AS event_id,
-       'removed' AS status
-FROM scoped WHERE event_id % 11 = 3
-UNION ALL
-SELECT part, CAST(event_id AS BIGINT), 'modified'
-FROM scoped WHERE event_id % 7 = 0 AND event_id % 11 <> 3
-UNION ALL
-SELECT part, CAST(-event_id - 1 AS BIGINT), 'added'
-FROM scoped WHERE part = 2 AND event_id % 13 = 1
-"""
-
-
-# --------------------------------------------------------------------------
-# q143: partition-spill integrity — keys physically present in more than
-# one table partition (checks/consistency.partition_spill). Distinct from
-# uniqueness q09/q42: a within-partition duplicate (the generator's
-# dup-renamed rows share the SAME partition by construction) is NOT a
-# spill; the check flags exactly the planted cross-partition copies. The
-# corpus is the full 4-partition generator table plus a copy of every
-# clip_id-suffix%23==11 row moved to the next partition. Oracle:
-# closed-form over the generator's partition/dup arithmetic — a key is a
-# violation iff its suffix is selected AND the key exists (dup-renamed
-# indices have no canonical row of their own).
-# --------------------------------------------------------------------------
-
-
-def q143_partition_spill(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from baskerville_spark.gates.consistency import partition_spill
-    from baskerville_spark.generator import GenConfig
-
-    cfg = GenConfig(n_rows=1000, n_parts=4)
-    clips_p, _ = _shared_clip_fixture(spark, cfg)
-    # column-pruned parquet read of the shared fixture: the old
-    # generate+persist path synthesized 1000 audio payloads just to take
-    # (clip_id, part_id)
-    clips = spark.read.parquet(clips_p).select("clip_id", "part_id")
-    suffix = F.substring("clip_id", 6, 12).cast("int")
-    spilled = clips.where(suffix % 23 == 11).withColumn(
-        "part_id", (F.col("part_id") + 1) % 4
-    )
-    corpus = clips.unionByName(spilled)
-    out = partition_spill(corpus, "clip_id", "part_id").persist()
-    out.count()
-    return out
-
-
-_Q143_SQL = """
-WITH idx AS (SELECT unnest(generate_series(0, 999)) AS s),
-fl AS (
-  SELECT s, least(3, (s*4)//1000) AS part,
-    (s > 0 AND s % 199 = 17
-       AND least(3, (s*4)//1000) = least(3, ((s-1)*4)//1000)
-       AND least(3, (s*4)//1000) <> 0) AS dup_renamed
-  FROM idx)
-SELECT printf('clip_%012d', s) AS clip_id,
-       CAST(2 AS BIGINT) AS n_parts,
-       CASE WHEN part = 3 THEN '0,3'
-            ELSE CAST(part AS VARCHAR) || ',' || CAST(part + 1 AS VARCHAR)
-       END AS parts
-FROM fl
-WHERE s % 23 = 11 AND NOT dup_renamed
-"""
-
-
-# --------------------------------------------------------------------------
-# q144: out-of-order ingestion rate (checks/consistency.out_of_order_stats)
-# — per user, the fraction of events whose event time runs behind the
-# running max of everything already ingested (ordered by event_id): the
-# measured lateness a streaming watermark must absorb. A 2-day backdate is
-# planted on every event_id%97==13 row (median per-user gap is ~7 h, so a
-# planted row is late unless it is its user's first); both engines apply
-# the identical mutation, so the late set needs no closed form. One
-# key-partitioned window pass + one hash aggregate; no global sort.
-# --------------------------------------------------------------------------
-
-
-def q144_out_of_order(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from baskerville_spark.gates.consistency import out_of_order_stats
-
-    ev = _t(spark, sf_dir, "events").select(
-        "user_id",
-        "event_id",
-        F.when(
-            F.col("event_id") % 97 == 13,
-            F.col("ts") - F.expr("INTERVAL 2 DAYS"),
-        ).otherwise(F.col("ts")).alias("ts"),
-    )
-    return out_of_order_stats(ev, "user_id", "event_id", "ts")
-
-
-_Q144_SQL = """
-WITH ev AS (
-  SELECT user_id, event_id,
-         CASE WHEN event_id % 97 = 13 THEN ts - INTERVAL 2 DAY ELSE ts END
-           AS ts
-  FROM events),
-x AS (
-  SELECT user_id, ts,
-         MAX(ts) OVER (PARTITION BY user_id ORDER BY event_id
-                       ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)
-           AS prev_max
-  FROM ev),
-a AS (
-  SELECT user_id,
-         CAST(COUNT(*) AS BIGINT) AS n_events,
-         CAST(SUM(CASE WHEN ts < prev_max THEN 1 ELSE 0 END) AS BIGINT)
-           AS n_late
-  FROM x GROUP BY 1)
-SELECT user_id, n_events, n_late,
-       ROUND(CAST(n_late AS DOUBLE) / CAST(n_events AS DOUBLE), 6)
-         AS late_frac,
-       ROUND(CAST(n_late AS DOUBLE) / CAST(n_events AS DOUBLE), 6) > 0.01
-         AS flagged
-FROM a
-"""
 
 
 # ---------------------------------------------------------------------------
@@ -1474,18 +88,18 @@ FROM a
 _GATES = (
     (validation.q21_clip_validation, fixtures._q21_sql),
     (sampling.q100_corpus_split, sampling.Q100_SQL),
-    (q101_file_skipping, _Q101_SQL),
-    (q102_zorder, _Q102_SQL),
-    (q103_compaction_plan, _Q103_SQL),
+    (layout.q101_file_skipping, layout.Q101_SQL),
+    (layout.q102_zorder, layout.Q102_SQL),
+    (layout.q103_compaction_plan, layout.Q103_SQL),
     (drift.q104_streaming_rolling_psi, drift._q104_sql),
     (audio_quality.q105_split_on_silence, audio_quality.Q105_SQL),
     (text.q106_transcript_edit_distance, text.Q106_SQL),
     (audio_quality.q107_concat_roundtrip, audio_quality.Q107_SQL),
-    (q108_enrich_with_state, _Q108_SQL),
+    (state.q108_enrich_with_state, state.Q108_SQL),
     (audio_dedup.q109_audio_align, audio_dedup.Q109_SQL),
-    (q110_sensitive_crypto, _Q110_SQL),
+    (sensitive.q110_sensitive_crypto, sensitive.Q110_SQL),
     (audio_quality.q111_bandwidth, audio_quality.Q111_SQL),
-    (q112_gap_fill, _Q112_SQL),
+    (timegrid.q112_gap_fill, timegrid.Q112_SQL),
     (audio_dedup.q113_mulaw_roundtrip, audio_dedup.Q113_SQL),
     (bpe.q114_bpe_merges, bpe.Q114_SQL),
     (bpe.q115_bpe_tokenize, bpe.Q115_SQL),
@@ -1497,9 +111,9 @@ _GATES = (
     (validation.q121_state_table_stats, validation._q121_sql),
     (audio_state.q122_audio_decode_state, audio_state._q122_sql),
     (validation.q123_streaming_state_ingest, validation.Q123_SQL),
-    (q124_schema_evolution, _Q124_SQL),
-    (q125_partition_completeness, _Q125_SQL),
-    (q126_row_level_diff, _Q126_SQL),
+    (evolution.q124_schema_evolution, evolution.Q124_SQL),
+    (completeness.q125_partition_completeness, completeness.Q125_SQL),
+    (snapshot.q126_row_level_diff, snapshot.Q126_SQL),
     (drift.q127_psi_attribution, drift._q127_sql),
     (history.q128_metric_anomalies, history.Q128_SQL),
     (suggest.q129_suggest_constraints, suggest.Q129_SQL),
@@ -1516,8 +130,8 @@ _GATES = (
     (sampling.q140_token_budget, sampling.Q140_SQL),
     (audio_dedup.q141_label_conflicts, audio_dedup.Q141_SQL),
     (drift.q142_wasserstein_drift, drift.Q142_SQL),
-    (q143_partition_spill, _Q143_SQL),
-    (q144_out_of_order, _Q144_SQL),
+    (consistency.q143_partition_spill, consistency.Q143_SQL),
+    (consistency.q144_out_of_order, consistency.Q144_SQL),
     # regression canaries: the oldest driver-green gates
     (web.q01_request_sets, web.Q01_SQL),
     (web.q02_request_intervals, web.Q02_SQL),
@@ -1540,13 +154,13 @@ _GATES = (
     (dedup.q19_minhash_pairs, dedup.Q19_SQL),
     (dedup.q20_simhash, dedup._q20_sql),
     (similarity.q22_vector_pairs, similarity.Q22_SQL),
-    (q23_streaming_window_counts, _Q23_SQL),
+    (stateful.q23_streaming_window_counts, stateful.Q23_SQL),
     (web.q24_sessionization, web.Q24_SQL),
     (web.q25_json_props, web.Q25_SQL),
     (web.q26_rollup_counts, web.Q26_SQL),
     (web.q27_asof_prev_click, web.Q27_SQL),
     (sampling.q28_stratified_sample, sampling._q28_sql),
-    (q29_state_merge, _Q29_SQL),
+    (state.q29_state_merge, state.Q29_SQL),
     (web.q30_cube_counts, web.Q30_SQL),
     (web.q31_heavy_both_types, web.Q31_SQL),
     (similarity.q32_srp_lsh_pairs, similarity.Q32_SQL),
@@ -1556,17 +170,17 @@ _GATES = (
     (web.q36_session_window, web.Q36_SQL),
     (geo.q37_geo_localize, geo.Q37_SQL),
     (similarity.q38_ivf_topk, similarity.Q38_SQL),  # exact top-k on the planted-cluster corpus
-    (q39_streaming_dedup, _Q39_SQL),
+    (stateful.q39_streaming_dedup, stateful.Q39_SQL),
     (multimodal.q40_image_features, multimodal.Q40_SQL),
     (multimodal.q41_video_frame_sample, multimodal.Q41_SQL),
     (uniqueness.q42_dup_exemplars, uniqueness.Q42_SQL),
     (web.q43_first_last_agg, web.Q33_SQL),  # same semantics, single-shuffle plan
     (validation.q44_drift_verdicts, validation._q44_sql),
-    (q45_streaming_kafka_shaped, _Q45_SQL),
+    (kafka_shaped.q45_streaming_kafka_shaped, kafka_shaped.Q45_SQL),
     (validation.q46_sketch_accuracy, validation._q46_sql),
-    (q47_jdbc_segment_stats, _Q47_SQL),
+    (registry.q47_jdbc_segment_stats, registry.Q47_SQL),
     (validation.q48_ref_integrity, validation.Q48_SQL),
-    (q49_schema_enforce, _Q49_SQL),
+    (schema_check.q49_schema_enforce, schema_check.Q49_SQL),
     (validation.q50_pattern_violations, validation.Q50_SQL),
     (dedup.q51_normalized_dups, dedup.Q51_SQL),
     (text.q52_heavy_hitter_tokens, text.Q52_SQL),
@@ -1580,9 +194,9 @@ _GATES = (
     (web.q60_challenge_commands, web.Q60_SQL),
     # same closed-form grid as q21: resume must reproduce the one-shot run
     (validation.q61_resume_verdicts, fixtures._q21_sql),
-    (q62_feature_loop, _Q62_SQL),
-    (q63_sensitive_roundtrip, _Q63_SQL),
-    (q64_stateful_stream_stats, _Q64_SQL),
+    (feature_loop.q62_feature_loop, feature_loop.Q62_SQL),
+    (sensitive.q63_sensitive_roundtrip, sensitive.Q63_SQL),
+    (stateful.q64_stateful_stream_stats, stateful.Q64_SQL),
     (graph.q65_dedup_clusters, graph.Q65_SQL),
     (web.q66_sliding_window_counts, web.Q66_SQL),
     (graph.q67_chain_clusters_bigstar, graph.Q67_SQL),
@@ -1592,8 +206,8 @@ _GATES = (
     (text.q71_repetition_metrics, text.Q71_SQL),
     (text.q72_char_entropy, text.Q72_SQL),
     (text.q73_pii_scrub, text.Q73_SQL),
-    (q74_payload_bytes, _Q74_SQL),
-    (q75_speaking_rate, _Q75_SQL),
+    (consistency.q74_payload_bytes, consistency.Q74_SQL),
+    (consistency.q75_speaking_rate, consistency.Q75_SQL),
     (dedup.q76_decontamination, dedup.Q76_SQL),
     (packing.q77_sequence_packing, packing.Q77_SQL),
     (sampling.q78_mixture_sample, sampling._q78_sql),
@@ -1612,8 +226,8 @@ _GATES = (
     (audio_quality.q91_overlay, audio_quality.Q91_SQL),
     (audio_quality.q92_pitch, audio_quality.Q92_SQL),
     (bloom.q93_bloom_semi, bloom.Q93_SQL),
-    (q94_snapshot_diff, _Q94_SQL),
-    (q95_incremental_revalidation, _q95_sql),
+    (snapshot.q94_snapshot_diff, snapshot.Q94_SQL),
+    (snapshot.q95_incremental_revalidation, snapshot._q95_sql),
     (drift.q96_rolling_psi, drift._q96_sql),
     (drift.q97_rolling_ks, drift._q97_sql),
     (validation.q98_quarantine_routing, validation._q98_sql),

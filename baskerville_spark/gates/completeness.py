@@ -28,8 +28,10 @@ Verdicts per partition:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from baskerville_spark.gates.fixtures import _t
 
 #: fraction of its expected volume a partition may fall short by
 COUNT_TOLERANCE = 0.50
@@ -92,3 +94,60 @@ def completeness_verdicts(
         exp.cast("long").alias("expected_rows"),
         status.otherwise(F.lit("ok")).alias("status"),
     )
+
+
+# --------------------------------------------------------------------------
+# q125: partition completeness + freshness vs a baseline manifest — the
+# verification the reference's partition maintenance (temporal_partition.py
+# pre-creates partitions, database_maintenance.py:20 re-runs the generator)
+# never performs: did the data actually arrive? One narrow agg pass over
+# (day, ts) — payload pruned at the scan — joined to a broadcast manifest.
+# Planted: day 3 dropped (missing), day 5 thinned to ~25% vs a 50% floor
+# (row_count_low), day 7 truncated at 18:00 vs a 3 h staleness bound
+# (stale), day 29 absent from the manifest (unexpected).
+# --------------------------------------------------------------------------
+
+
+def q125_partition_completeness(spark: SparkSession, sf_dir: str) -> DataFrame:
+    e = (
+        _t(spark, sf_dir, "events")
+        .withColumn("ts", F.col("ts").cast("timestamp"))  # NTZ → event-time
+        .withColumn("day", F.dayofmonth("ts"))
+    )
+    expected = expected_from_snapshot(e.filter(F.col("day") != 29), "day", "ts")
+    cutoff = F.to_timestamp(F.lit("2024-01-07 18:00:00"))
+    current = e.filter(
+        (F.col("day") != 3)
+        & ((F.col("day") != 5) | (F.col("event_id") % 4 == 0))
+        & ((F.col("day") != 7) | (F.col("ts") < cutoff))
+    )
+    return completeness_verdicts(current, expected, "day", "ts")
+
+
+Q125_SQL = """
+WITH e AS (
+  SELECT event_id, ts, CAST(day(ts) AS INT) AS day FROM events),
+expected AS (
+  SELECT day AS partition, CAST(COUNT(*) AS BIGINT) AS expected_rows,
+         MAX(ts) AS expected_max_ts
+  FROM e WHERE day <> 29 GROUP BY day),
+cur AS (
+  SELECT * FROM e
+  WHERE day <> 3
+    AND (day <> 5 OR event_id % 4 = 0)
+    AND (day <> 7 OR ts < TIMESTAMP '2024-01-07 18:00:00')),
+obs AS (
+  SELECT day AS partition, CAST(COUNT(*) AS BIGINT) AS n_rows,
+         MAX(ts) AS max_ts
+  FROM cur GROUP BY day)
+SELECT COALESCE(o.partition, x.partition) AS partition,
+       CAST(COALESCE(o.n_rows, 0) AS BIGINT) AS n_rows,
+       CAST(x.expected_rows AS BIGINT) AS expected_rows,
+       CASE WHEN x.partition IS NULL THEN 'unexpected_partition'
+            WHEN o.partition IS NULL THEN 'missing_partition'
+            WHEN o.n_rows < CEIL(x.expected_rows * 0.5) THEN 'row_count_low'
+            WHEN floor(epoch(x.expected_max_ts)) - floor(epoch(o.max_ts))
+                 > 10800 THEN 'stale_partition'
+            ELSE 'ok' END AS status
+FROM obs o FULL OUTER JOIN expected x ON o.partition = x.partition
+"""

@@ -24,7 +24,10 @@ downstream joins can broadcast.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from baskerville_spark.gates.fixtures import _t
 
 # Iceberg-legal widening promotions (spec "Schema Evolution": int->long,
 # float->double, decimal precision growth at equal scale).
@@ -127,3 +130,47 @@ def schema_evolution_df(
          schema_evolution_report(old, new)],
         _REPORT_SCHEMA,
     )
+
+
+# --------------------------------------------------------------------------
+# q124: schema-evolution compatibility — the metadata-plane validation the
+# reference never had (its schema is frozen SQLAlchemy DDL, db/models.py;
+# drift surfaces only when maintain_db or an insert crashes). The engine
+# classifies every column-level change between the validated snapshot's
+# schema and the current one by Iceberg's published evolution rules before
+# any data moves. Pure driver-side StructType algebra — the gate's cost is
+# identical at sf0.001 and 10^12 rows. The oracle is closed-form: the same
+# six planted changes, stated as VALUES.
+# --------------------------------------------------------------------------
+
+
+def q124_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Old = the documents table as validated. New = a plausibly-evolved
+    snapshot with six changes: doc_id narrowed bigint->int (breaking),
+    lang dropped (breaking), source retyped string->int hash bucket
+    (breaking), n_chars retyped bigint->double (breaking — long->double is
+    NOT an Iceberg-legal promotion), quality_score added optional (ok),
+    shard_key added required/non-null (breaking)."""
+    old = _t(spark, sf_dir, "documents")
+    new = old.select(
+        F.col("doc_id").cast("int").alias("doc_id"),  # narrowed: BREAKING
+        "text",
+        # lang dropped: BREAKING
+        F.xxhash64("source").cast("int").alias("source"),  # retyped: BREAKING
+        F.col("n_chars").cast("double").alias("n_chars"),  # long->double: BREAKING
+        (F.col("n_chars") / 600.0).alias("quality_score"),  # added optional: ok
+        F.lit(7).alias("shard_key"),  # added non-nullable: BREAKING
+    )
+    return schema_evolution_df(spark, old, new)
+
+
+Q124_SQL = """
+SELECT * FROM (VALUES
+  ('quality_score', 'added_optional', NULL,      'double', 1),
+  ('shard_key',     'added_required', NULL,      'int',    0),
+  ('lang',          'dropped',        'string',  NULL,     0),
+  ('doc_id',        'retyped',        'bigint',  'int',    0),
+  ('n_chars',       'retyped',        'bigint',  'double', 0),
+  ('source',        'retyped',        'string',  'int',    0)
+) AS t(column_name, change, from_type, to_type, compatible)
+"""

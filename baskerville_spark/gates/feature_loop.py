@@ -43,13 +43,19 @@ Scale notes:
 
 from __future__ import annotations
 
+import os
+import tempfile
 from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
-from baskerville_spark.gates.features import (
-    UpdateSpec,
-    update_feature_vector,
+from baskerville_spark.gates.features import UpdateSpec, update_feature_vector
+from baskerville_spark.gates.fixtures import (
+    _gate_tmp_detach,
+    _split_events_mod3,
+    _stream_shuffle,
+    _t,
 )
 from baskerville_spark.gates.state import StateStore
 
@@ -131,3 +137,103 @@ def run_feature_loop(
         .trigger(availableNow=True)
         .start()
     )
+
+
+# ---------------------------------------------------------------------------
+# Q62 — incremental feature-cache loop == one-shot batch (client pipeline,
+#       reference client_pipeline.py:37-48 / base_spark.py:803-867 /
+#       request_set_cache.py:62-97)
+# ---------------------------------------------------------------------------
+
+def q62_feature_loop(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The client-pipeline loop END-TO-END under the hash gate: events split
+    into three deterministic micro-batches (event_id mod 3), streamed
+    file-per-trigger through ``run_feature_loop`` (GenerateFeatures →
+    merge-with-cache → atomic republish, runtime/feature_loop.py), and the
+    FINAL cache must hash-equal a one-shot SQL computation over all events.
+
+    This is the strongest claim about the merge algebra: q58 grades ONE
+    merge step against closed form; this grades the whole loop — three
+    groupBys, two update_feature_vector merges (textbook pooled variance,
+    the exactness invariant refresh_feature_cache documents), untouched-key
+    passthrough, and the versioned-pointer StateStore — against DuckDB
+    aggregating the undivided table. Any loss, duplication, or pooling
+    error in any batch breaks the hash. round(4)+float32 on both engines
+    absorbs summation-order ulp noise exactly as q57/q58 do.
+
+    The cache's pooled-mean column is NOT in the hashed row: the
+    testdata's 2-dp values make many true means terminate exactly ON a
+    4-dp rounding boundary (58.555750 = 4684.46/80; 55.683750 =
+    3118.29/56), where engines legitimately disagree by one final digit
+    (HALF_UP over the double's exact decimal vs scaled-double rounding).
+    The mean is fully determined by (value_total, request_total), both
+    hashed exactly, so omitting the division loses nothing; the pooled
+    mean still gates the hash through the variance pool (its new_mean
+    term) and is directly graded by q58.
+    """
+    e = _t(spark, sf_dir, "events")
+    tmp = tempfile.mkdtemp(prefix="bsk_q62_")
+    src = f"{tmp}/src"
+    _split_events_mod3(e, src)
+
+    def vector_fn(batch: DataFrame) -> DataFrame:
+        return batch.groupBy("user_id").agg(
+            F.count(F.lit(1)).cast("double").alias("request_total"),
+            F.sum("value").alias("value_total"),
+            F.max("value").alias("value_max"),
+            F.min("value").alias("value_min"),
+            F.avg("value").alias("value_avg"),
+            # var_samp of a 1-row group is NULL; 0.0 keeps the pooled
+            # algebra exact ((cn-1)*cv -> 0 either way)
+            F.coalesce(F.var_samp("value"), F.lit(0.0)).alias("value_var"),
+        )
+
+    specs = [
+        UpdateSpec("request_total", "total", ("request_total",)),
+        UpdateSpec("value_total", "total", ("value_total",)),
+        UpdateSpec("value_max", "maximum", ("value_max",)),
+        UpdateSpec("value_min", "minimum", ("value_min",)),
+        UpdateSpec("value_avg", "mean", ("value_avg", "request_total")),
+        UpdateSpec(
+            "value_var", "variance", ("value_var", "request_total", "value_avg")
+        ),
+    ]
+    store = StateStore(f"{tmp}/cache")
+    with _stream_shuffle(spark):
+        q = run_feature_loop(
+            spark,
+            src,
+            spark.read.parquet(src).schema,
+            store,
+            ["user_id"],
+            specs,
+            vector_fn,
+            checkpoint_dir=f"{tmp}/ckpt",
+        )
+        q.awaitTermination()
+    n_versions = len(
+        [d for d in os.listdir(store.root) if d.startswith("v_")]
+    )
+    if n_versions < 3:  # one republish per micro-batch, else not incremental
+        raise RuntimeError(f"expected >=3 cache versions, got {n_versions}")
+
+    final = store.read(spark)
+    return _gate_tmp_detach(final.select(
+        "user_id",
+        F.col("request_total").cast("long").alias("request_total"),
+        *[
+            F.round(F.col(c), 4).cast("float").alias(c)
+            for c in ("value_total", "value_max", "value_min", "value_var")
+        ],
+    ), tmp)
+
+
+Q62_SQL = """
+SELECT user_id,
+       CAST(COUNT(*) AS BIGINT) AS request_total,
+       CAST(ROUND(SUM(value), 4) AS REAL) AS value_total,
+       CAST(ROUND(MAX(value), 4) AS REAL) AS value_max,
+       CAST(ROUND(MIN(value), 4) AS REAL) AS value_min,
+       CAST(ROUND(COALESCE(VAR_SAMP(value), 0), 4) AS REAL) AS value_var
+FROM events GROUP BY user_id
+"""

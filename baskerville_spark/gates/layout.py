@@ -20,8 +20,10 @@ the "DB" is a file format.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from baskerville_spark.gates.fixtures import _t
 
 
 def file_skip_plan(file_stats: DataFrame, lo: float, hi: float) -> DataFrame:
@@ -96,3 +98,135 @@ def plan_compaction(file_stats: DataFrame, target_bytes: int) -> DataFrame:
         F.when(is_small, (before / F.lit(target_bytes)).cast("long"))
         .alias("compaction_group"),
     )
+
+
+# --------------------------------------------------------------------------
+# q101/q102: data-layout operators — min/max file skipping, z-order values
+# --------------------------------------------------------------------------
+
+
+def q101_file_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """File-skipping gate: lineitem split into 50 synthetic 'files'
+    (l_orderkey mod 50), per-file min/max(l_extendedprice) stats, then the
+    skip/scan plan for BETWEEN 20000 AND 30000 — with the SOUNDNESS
+    invariant in the result: every file's actual in-range match count
+    rides along, and a skipped file must show zero (the oracle recomputes
+    stats, plan, and counts from the raw rows)."""
+    lo, hi = 20000.0, 30000.0
+    li = _t(spark, sf_dir, "lineitem")
+    stats = li.groupBy((F.col("l_orderkey") % 50).alias("file_id")).agg(
+        F.min("l_extendedprice").alias("min_v"),
+        F.max("l_extendedprice").alias("max_v"),
+        F.count(F.lit(1)).alias("n_rows"),
+        F.sum(
+            F.col("l_extendedprice").between(lo, hi).cast("long")
+        ).alias("n_matching"),
+    )
+    plan = file_skip_plan(stats, lo, hi)
+    return plan.select(
+        "file_id",
+        "action",
+        "reason",
+        "n_rows",
+        "n_matching",
+        ((F.col("action") == "scan") | (F.col("n_matching") == 0)).alias("sound"),
+    )
+
+
+Q101_SQL = """
+WITH s AS (
+  SELECT l_orderkey % 50 AS file_id,
+         MIN(l_extendedprice) AS min_v,
+         MAX(l_extendedprice) AS max_v,
+         COUNT(*) AS n_rows,
+         SUM(CASE WHEN l_extendedprice BETWEEN 20000 AND 30000
+                  THEN 1 ELSE 0 END) AS n_matching
+  FROM lineitem GROUP BY 1)
+SELECT file_id,
+       CASE WHEN max_v < 20000 OR min_v > 30000 THEN 'skip'
+            ELSE 'scan' END AS action,
+       CASE WHEN max_v < 20000 THEN 'entirely_below'
+            WHEN min_v > 30000 THEN 'entirely_above'
+            ELSE 'overlaps' END AS reason,
+       CAST(n_rows AS BIGINT) AS n_rows,
+       CAST(n_matching AS BIGINT) AS n_matching,
+       (NOT (max_v < 20000 OR min_v > 30000)) OR n_matching = 0 AS sound
+FROM s
+"""
+
+
+def q102_zorder(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Z-order gate: interleaved-bits z-values over two bucketed customer
+    dimensions (custkey mod 256, nationkey — both < 2^8), plus the
+    per-z-octant counts a range repartition would use. The oracle rebuilds
+    the interleave with the same shift/AND arithmetic in SQL — bit-exact,
+    and the octant histogram pins the clustering behavior, not just the
+    per-row math."""
+    c = _t(spark, sf_dir, "customer")
+    z = z_value(F.col("c_custkey") % 256, F.col("c_nationkey"))
+    return c.select(
+        "c_custkey",
+        z.alias("z"),
+        F.shiftright(z, 13).alias("z_octant"),
+    )
+
+
+Q102_SQL = """
+SELECT c_custkey,
+       CAST({z} AS BIGINT) AS z,
+       CAST({z} AS BIGINT) >> 13 AS z_octant
+FROM customer
+""".format(
+    z=" + ".join(
+        f"((((c_custkey % 256) >> {i}) & 1) << {2 * i})"
+        f" + (((c_nationkey >> {i}) & 1) << {2 * i + 1})"
+        for i in range(8)
+    )
+)
+
+
+# --------------------------------------------------------------------------
+# q103: small-file compaction planning (Iceberg maintenance shape)
+# --------------------------------------------------------------------------
+
+
+def q103_compaction_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Compaction-plan gate: lineitem as a 7-partition × ~50-file layout
+    with synthetic per-file byte sizes (row count × 100, every 9th file
+    ×100 bigger — the planted 'already big' files that must come out with
+    a NULL group). The contiguous prefix-sum grouping must match DuckDB's
+    window-cumsum restatement exactly, per partition."""
+    li = _t(spark, sf_dir, "lineitem")
+    files = li.groupBy(
+        (F.col("l_orderkey") % 7).alias("partition"),
+        (F.col("l_orderkey") % 50).alias("file_id"),
+    ).agg(
+        (
+            F.count(F.lit(1))
+            * F.when(F.col("file_id") % 9 == 0, 10000).otherwise(100)
+        ).alias("bytes")
+    )
+    plan = plan_compaction(files, target_bytes=40_000)
+    return plan.select(
+        "partition", "file_id", "bytes", "is_small", "compaction_group"
+    )
+
+
+Q103_SQL = """
+WITH f AS (
+  SELECT l_orderkey % 7 AS partition, l_orderkey % 50 AS file_id,
+         COUNT(*) * (CASE WHEN (l_orderkey % 50) % 9 = 0
+                          THEN 10000 ELSE 100 END) AS bytes
+  FROM lineitem GROUP BY 1, 2),
+p AS (
+  SELECT partition, file_id, bytes,
+         (bytes < 40000) AS is_small,
+         COALESCE(SUM(CASE WHEN bytes < 40000 THEN bytes END) OVER (
+             PARTITION BY partition ORDER BY file_id
+             ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS before_b
+  FROM f)
+SELECT partition, file_id, CAST(bytes AS BIGINT) AS bytes, is_small,
+       CASE WHEN is_small
+            THEN CAST(before_b // 40000 AS BIGINT) END AS compaction_group
+FROM p
+"""

@@ -16,8 +16,10 @@ from __future__ import annotations
 from dataclasses import dataclass
 from typing import Any
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from baskerville_spark.gates.fixtures import _t
 
 
 @dataclass(frozen=True)
@@ -62,3 +64,56 @@ def drop_if_missing(df: DataFrame, specs: list[ColumnSpec]) -> DataFrame:
 def enforce_schema(df: DataFrame, specs: list[ColumnSpec]) -> DataFrame:
     """Full enforcement funnel: add-missing → fill → drop-if-missing."""
     return drop_if_missing(fill_defaults(add_missing_columns(df, specs), specs), specs)
+
+
+# ---------------------------------------------------------------------------
+# Q49/Q50 — schema-enforcement funnel and declared-pattern checks under the
+#           hash gate (checks/schema_check.py was pytest-only before)
+# ---------------------------------------------------------------------------
+
+def q49_schema_enforce(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The full ``enforce_schema`` funnel (add-missing → fill-defaults →
+    drop-if-missing; reference log_parsers.py:173-250) under the hash gate.
+    Fixture plants deterministic holes in documents: text NULLed for
+    doc_id ≡ 0 (mod 19) — those rows must be DROPPED; lang NULLed for
+    doc_id ≡ 0 (mod 13) — those must be FILLED with 'und'; and the spec
+    requires an absent ``ingest_flag`` int column — added as lit(1) for
+    every surviving row. The per-lang aggregate pins all three behaviors:
+    fill shows up as the 'und' group, drop as the missing mod-19 rows in
+    every count, add-missing as n_flag == n_docs."""
+    d = _t(spark, sf_dir, "documents").select(
+        "doc_id",
+        F.when(F.col("doc_id") % 19 == 0, F.lit(None)).otherwise(F.col("text")).alias("text"),
+        F.when(F.col("doc_id") % 13 == 0, F.lit(None)).otherwise(F.col("lang")).alias("lang"),
+        "n_chars",
+    )
+    specs = [
+        ColumnSpec("lang", default="und"),
+        ColumnSpec("text", drop_if_missing=True),
+        ColumnSpec("ingest_flag", dtype="int", required=True, default=1),
+    ]
+    return (
+        enforce_schema(d, specs)
+        .groupBy("lang")
+        .agg(
+            F.count(F.lit(1)).alias("n_docs"),
+            F.sum("n_chars").alias("sum_chars"),
+            F.sum("ingest_flag").alias("n_flag"),
+        )
+    )
+
+
+Q49_SQL = """
+WITH d AS (
+  SELECT doc_id,
+         CASE WHEN doc_id % 19 = 0 THEN NULL ELSE text END AS text,
+         CASE WHEN doc_id % 13 = 0 THEN NULL ELSE lang END AS lang,
+         n_chars
+  FROM documents),
+f AS (
+  SELECT COALESCE(lang, 'und') AS lang, n_chars, 1 AS ingest_flag
+  FROM d WHERE text IS NOT NULL)
+SELECT lang, COUNT(*) AS n_docs, CAST(SUM(n_chars) AS BIGINT) AS sum_chars,
+       CAST(SUM(ingest_flag) AS BIGINT) AS n_flag
+FROM f GROUP BY lang
+"""

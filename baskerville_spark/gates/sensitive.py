@@ -25,11 +25,13 @@ rows can skip with ``report=False`` (the reference always pays them).
 
 from __future__ import annotations
 
+import tempfile
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from baskerville_spark.gates.fixtures import _gate_tmp_detach, _t
 from baskerville_spark.gates.state import StateStore
 
 
@@ -177,3 +179,120 @@ def decrypt_columns(
             ).cast("string"),
         )
     return out
+
+
+# ---------------------------------------------------------------------------
+# Q63 — sensitive-data split / lagging re-merge (CacheSensitiveData →
+#       MergeWithSensitiveData, tasks.py:1291-1428)
+# ---------------------------------------------------------------------------
+
+def q63_sensitive_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The privacy split under the hash gate: events are split into two
+    micro-batches (event_id parity); each batch's sensitive columns
+    (user_id, props) are stashed in the versioned StateStore and the
+    prediction leg sees ONLY the anonymized frame. Batch 1's predictions
+    merge back AFTER batch 2 has been stashed — the reference's
+    predictions-lag-the-stash scenario (tasks.py:1411-1420) — so the gate
+    fails unless the stash ACCUMULATES per key across batches (the Redis
+    SET-per-uuid semantics) instead of being replaced by the newest write.
+    MergeReport.lost must be 0 for both legs (raised, not logged), the
+    anonymized frames must provably not carry the sensitive columns, and
+    the restored rows — key, prediction, and the exact sensitive strings —
+    must hash-equal DuckDB computing the same over the undivided table.
+    """
+    e = _t(spark, sf_dir, "events")
+    sensitive_cols = ["user_id", "props"]
+    tmp = tempfile.mkdtemp(prefix="bsk_q63_")
+    store = StateStore(f"{tmp}/stash")
+    b1 = e.where(F.col("event_id") % 2 == 0)
+    b2 = e.where(F.col("event_id") % 2 == 1)
+    anon1 = cache_sensitive(b1, store, ["event_id"], sensitive_cols)
+    # batch 2 lands in the stash BEFORE batch 1's predictions return
+    anon2 = cache_sensitive(b2, store, ["event_id"], sensitive_cols)
+    for anon in (anon1, anon2):
+        leaked = set(anon.columns) & set(sensitive_cols)
+        if leaked:  # the anonymized leg must never carry sensitive columns
+            raise RuntimeError(f"sensitive columns leaked: {leaked}")
+
+    def predict(anon: DataFrame) -> DataFrame:
+        return anon.select(
+            "event_id",
+            F.when(F.col("event_type") == "error", 1)
+            .otherwise(0).cast("int").alias("prediction"),
+        )
+
+    out = []
+    for anon in (anon1, anon2):
+        merged, rep = merge_sensitive(predict(anon), store, spark, ["event_id"])
+        if rep.lost != 0:  # reference logs this; we fail loudly
+            raise RuntimeError(f"merge lost {rep.lost} prediction rows")
+        out.append(merged.select("event_id", "prediction", *sensitive_cols))
+    return _gate_tmp_detach(out[0].unionByName(out[1]), tmp)
+
+
+Q63_SQL = """
+SELECT event_id,
+       CAST(CASE WHEN event_type = 'error' THEN 1 ELSE 0 END AS INTEGER)
+         AS prediction,
+       user_id, props
+FROM events
+"""
+
+
+# --------------------------------------------------------------------------
+# q110: field-level AES-GCM crypto on sensitive columns (reference
+# util/crypto.py:17-72 via baskerville_tools.py:67-84) — Spark-native
+# aes_encrypt/aes_decrypt, gated through the decrypt∘encrypt identity plus
+# the GCM wire-shape (iv12‖ct‖tag16) and an AAD-tamper probe.
+# --------------------------------------------------------------------------
+
+_Q110_KEY = "0123456789abcdef0123456789abcdef"  # 32-byte AES-256 test key
+
+
+def q110_sensitive_crypto(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Crypto gate: a stand-in sensitive string per event is AES-GCM
+    encrypted bound to its event_id (AAD), then (a) decrypted back —
+    identity under the hash; (b) length-checked against the GCM wire shape
+    iv(12)‖ct(len)‖tag(16) — deterministic though the IV is random;
+    (c) tamper-probed — permissive decrypt under a DIFFERENT AAD must
+    yield NULL (ciphertexts cannot be replayed onto other rows)."""
+    ev = (
+        _t(spark, sf_dir, "events")
+        .where(F.col("event_id") % 20 == 0)
+        .select(
+            "event_id",
+            F.concat(F.lit("ip-10-0-"), F.col("user_id")).alias("secret"),
+        )
+    )
+    ev = ev.withColumn("__plain_len", F.octet_length("secret"))
+    enc = encrypt_columns(ev, ["secret"], _Q110_KEY, aad_col="event_id")
+    # GCM wire shape: iv(12) ‖ ciphertext(len(plain)) ‖ tag(16)
+    enc = enc.withColumn(
+        "len_ok", F.octet_length("secret") == F.col("__plain_len") + 28
+    )
+    # both decrypts ride the SAME linear plan (a second column, not a
+    # self-join): one scan, zero shuffles, whole-stage codegen end to end
+    enc = enc.withColumn(
+        "secret_tampered", F.col("secret")
+    ).withColumn("__wrong_aad", F.concat(F.lit("x"), "event_id"))
+    enc = decrypt_columns(
+        enc, ["secret_tampered"], _Q110_KEY,
+        aad_col="__wrong_aad", permissive=True,
+    )
+    dec = decrypt_columns(enc, ["secret"], _Q110_KEY, aad_col="event_id")
+    return dec.select(
+        "event_id",
+        F.col("secret").alias("secret_roundtrip"),
+        "len_ok",
+        F.col("secret_tampered").isNull().alias("tamper_null"),
+    )
+
+
+Q110_SQL = """
+SELECT event_id,
+       'ip-10-0-' || CAST(user_id AS VARCHAR) AS secret_roundtrip,
+       TRUE AS len_ok,
+       TRUE AS tamper_null
+FROM events
+WHERE event_id % 20 = 0
+"""

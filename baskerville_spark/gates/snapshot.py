@@ -25,8 +25,21 @@ input table is the engine-native replacement at warehouse scale.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+import tempfile
+
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from baskerville_spark.gates.fixtures import (
+    _gate_tmp_detach,
+    _q21_sql,
+    _shared_clip_fixture,
+    _t,
+    _verdict_grid,
+)
+from baskerville_spark.generator import GenConfig
+from baskerville_spark.runtime import manifest as manifest_mod
+from baskerville_spark.runtime.runner import ValidationConfig, run_resumable
 
 # modular row-hash sum: pmod keeps each term < 2^31, so even 10^12 rows
 # sum to < 2^71... which overflows int64 — hence the decimal(38,0) cast
@@ -147,3 +160,193 @@ def row_level_diff(
         status.alias("status"),
     )
     return out.where(F.col("status").isNotNull())
+
+
+# --------------------------------------------------------------------------
+# q94: snapshot content diff — which partitions changed between snapshots
+# --------------------------------------------------------------------------
+
+
+def q94_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Snapshot-diff gate: snapshot B is events with deterministic edits —
+    two users' rows dropped (changes their partitions), one user's error
+    values bumped (changes its partition), one whole partition dropped
+    (removed), one synthetic partition appended (added). The signature diff
+    (count + xor + modular-sum of full-row xxhash64, one agg pass per
+    snapshot) must classify every partition exactly as DuckDB's literal
+    multiset comparison does."""
+    e = _t(spark, sf_dir, "events").select(
+        F.pmod(F.col("user_id"), F.lit(12)).cast("int").alias("part"),
+        "user_id",
+        "event_type",
+        "value",
+    )
+    a = e
+    bumped = (F.col("event_type") == "error") & (F.col("user_id") % 103 == 5)
+    b_mod = e.where(
+        (F.col("user_id") % 101 != 7) & (F.col("part") != 9)
+    ).withColumn(
+        "value", F.when(bumped, F.col("value") + 1).otherwise(F.col("value"))
+    )
+    b_new = e.where(F.col("user_id") % 97 == 11).withColumn(
+        "part", F.lit(12).cast("int")
+    )
+    b = b_mod.unionByName(b_new)
+    d = snapshot_diff(a, b, "part", hash_cols=["user_id", "event_type", "value"])
+    return d.select("partition", "status", "n_rows_a", "n_rows_b")
+
+
+Q94_SQL = """
+WITH e AS (
+  SELECT CAST(user_id % 12 AS INT) AS part, user_id, event_type, value
+  FROM events),
+a AS (SELECT * FROM e),
+b AS (
+  SELECT part, user_id, event_type,
+         CASE WHEN event_type = 'error' AND user_id % 103 = 5
+              THEN value + 1 ELSE value END AS value
+  FROM e WHERE user_id % 101 <> 7 AND part <> 9
+  UNION ALL
+  SELECT CAST(12 AS INT) AS part, user_id, event_type, value
+  FROM e WHERE user_id % 97 = 11),
+u AS (
+  SELECT part, user_id, event_type, value, SUM(in_a) AS na, SUM(in_b) AS nb
+  FROM (
+    SELECT part, user_id, event_type, value, 1 AS in_a, 0 AS in_b FROM a
+    UNION ALL
+    SELECT part, user_id, event_type, value, 0 AS in_a, 1 AS in_b FROM b)
+  GROUP BY part, user_id, event_type, value),
+p AS (
+  SELECT part, SUM(na) AS tot_a, SUM(nb) AS tot_b,
+         SUM(CASE WHEN na <> nb THEN 1 ELSE 0 END) AS n_mismatch
+  FROM u GROUP BY part)
+SELECT part AS partition,
+       CASE WHEN tot_a = 0 THEN 'added'
+            WHEN tot_b = 0 THEN 'removed'
+            WHEN n_mismatch > 0 THEN 'changed'
+            ELSE 'unchanged' END AS status,
+       CASE WHEN tot_a = 0 THEN NULL ELSE CAST(tot_a AS BIGINT) END AS n_rows_a,
+       CASE WHEN tot_b = 0 THEN NULL ELSE CAST(tot_b AS BIGINT) END AS n_rows_b
+FROM p
+"""
+
+
+# --------------------------------------------------------------------------
+# q95: snapshot-diff-driven incremental revalidation (the 10^12-row story:
+# the table moved under a finished run; revalidate ONLY what changed)
+# --------------------------------------------------------------------------
+
+
+def q95_incremental_revalidation(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Protocol gate composing snapshot_diff with the resumable runtime.
+
+    Snapshot A (1000 rows x 4 parts) is fully validated. Snapshot B is the
+    generator's output for 1250 rows x 5 parts — by the generator's
+    contiguous block partitioning, parts 0-2 are row-identical to A, part 3
+    changes (the drift flag moves from part 3 to the new last part), and
+    part 4 is new. The protocol:
+      1. full run over A (manifest marks 0-3),
+      2. snapshot_diff(A, B) -> revalidate exactly [3 changed, 4 added],
+      3. invalidate part 3's manifest mark, run_resumable over B ->
+         processes exactly [3, 4], dynamic partition overwrite replaces
+         part 3's stale verdicts,
+      4. idempotence: a third run finds nothing pending.
+    The combined verdict grid (parts 0-2 from run A + 3-4 from run B) must
+    equal the from-scratch closed-form oracle for snapshot B — incremental
+    revalidation loses nothing, duplicates nothing, and never re-reads the
+    unchanged 3/5 of the table (the diff itself is one narrow signature
+    agg per snapshot; no payload ever shuffles)."""
+    cfg_a = GenConfig(n_rows=1000, n_parts=4)
+    cfg_b = GenConfig(n_rows=1250, n_parts=5)
+    tmp = tempfile.mkdtemp(prefix="bsk_q95_")
+    # both snapshots are session-shared read-only fixtures (A is the same
+    # table q21/q61 validate); manifest/out stay private to this gate
+    a_p, tref_a = _shared_clip_fixture(spark, cfg_a)
+    b_p, tref_b = _shared_clip_fixture(spark, cfg_b)
+    man_p, out_p = f"{tmp}/manifest", f"{tmp}/out"
+
+    run_a = run_resumable(spark, a_p, man_p, out_p, tref_a,
+                          cfg=ValidationConfig())
+    if run_a != [0, 1, 2, 3]:
+        raise RuntimeError(f"run A expected [0, 1, 2, 3], got {run_a}")
+
+    hash_cols = ["clip_id", "bytes", "sr_hz", "dur_ms", "codec", "transcript"]
+    affected = partitions_to_revalidate(
+        spark.read.parquet(a_p), spark.read.parquet(b_p), "part_id", hash_cols
+    )
+    if affected != [3, 4]:
+        raise RuntimeError(f"diff expected [3, 4], got {affected}")
+
+    manifest_mod.invalidate_partitions(man_p, affected)
+    run_b = run_resumable(spark, b_p, man_p, out_p, tref_b,
+                          cfg=ValidationConfig())
+    if run_b != [3, 4]:
+        raise RuntimeError(f"run B expected [3, 4], got {run_b}")
+    run_c = run_resumable(spark, b_p, man_p, out_p, tref_b,
+                          cfg=ValidationConfig())
+    if run_c:
+        raise RuntimeError(f"run C expected [], got {run_c}")
+
+    verdicts = spark.read.parquet(f"{out_p}/verdicts")
+    return _gate_tmp_detach(_verdict_grid(verdicts), tmp)
+
+
+def _q95_sql() -> str:
+    return _q21_sql(n_rows=1250, n_parts=5)
+
+
+# --------------------------------------------------------------------------
+# q126: row-level snapshot diff drill-down — stage 2 of the incremental
+# story. q94 (snapshot_diff) finds WHICH partitions changed shuffling only
+# |partitions| signature rows; this gate drills into exactly those
+# partitions (changed_parts pushed into both scans → partition pruning
+# skips the settled 14/16 of the table) and emits per-KEY verdicts:
+# added / removed / modified. Only narrow (partition, key, xxhash64) rows
+# shuffle; output is bounded by the churn, not the table. Planted churn in
+# parts {2,5} only: event_id%11==3 removed, surviving event_id%7==0 get a
+# suffixed event_type (modified — event_type is non-null at every sf, so
+# the modification can never be a value-level no-op), part-2 event_id%13==1
+# re-keyed to -(event_id)-1 (added — negation can never collide with the
+# non-negative id domain at ANY scale factor, unlike a fixed offset). The
+# oracle derives the identical verdict set in closed form.
+# --------------------------------------------------------------------------
+
+
+def q126_row_level_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
+    e = _t(spark, sf_dir, "events").withColumn(
+        "part", F.pmod(F.col("user_id"), F.lit(16)).cast("int")
+    )
+    scoped = F.col("part").isin(2, 5)
+    b = (
+        e.filter(~(scoped & (F.col("event_id") % 11 == 3)))
+        .withColumn(
+            "event_type",
+            F.when(
+                scoped & (F.col("event_id") % 7 == 0),
+                F.concat(F.col("event_type"), F.lit("_X")),
+            ).otherwise(F.col("event_type")),
+        )
+        .unionByName(
+            e.filter((F.col("part") == 2) & (F.col("event_id") % 13 == 1))
+            .withColumn("event_id", -F.col("event_id") - F.lit(1))
+        )
+    )
+    return row_level_diff(
+        e, b, "part", ["event_id"], changed_parts=[2, 5]
+    )
+
+
+Q126_SQL = """
+WITH e AS (
+  SELECT CAST(user_id % 16 AS INT) AS part, event_id FROM events),
+scoped AS (SELECT * FROM e WHERE part IN (2, 5))
+SELECT part AS partition, CAST(event_id AS BIGINT) AS event_id,
+       'removed' AS status
+FROM scoped WHERE event_id % 11 = 3
+UNION ALL
+SELECT part, CAST(event_id AS BIGINT), 'modified'
+FROM scoped WHERE event_id % 7 = 0 AND event_id % 11 <> 3
+UNION ALL
+SELECT part, CAST(-event_id - 1 AS BIGINT), 'added'
+FROM scoped WHERE part = 2 AND event_id % 13 = 1
+"""

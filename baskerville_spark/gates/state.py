@@ -25,6 +25,8 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from baskerville_spark.gates.fixtures import _t
+
 def enrich_with_state(
     batch: DataFrame,
     state: DataFrame,
@@ -119,3 +121,99 @@ class StateStore:
             json.dump({"version": version}, f)
         os.replace(tmp, self._ptr)  # atomic pointer flip
         return path
+
+
+def q29_state_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Incremental state upsert (reference request-set cache full_outer merge,
+    request_set_cache.py:370-400) via runtime.state.upsert_state."""
+    e = _t(spark, sf_dir, "events")
+    ts_epoch = F.unix_timestamp(F.col("ts").cast("timestamp"))
+    half = F.lit("2024-01-15 00:00:00")
+    agg = lambda df: df.groupBy("user_id").agg(  # noqa: E731
+        F.count(F.lit(1)).alias("n_events"),
+        F.max(ts_epoch).alias("updated_at"),
+    )
+    state = agg(e.where(F.col("ts") < half))
+    updates = agg(e.where(F.col("ts") >= half))
+    return upsert_state(state, updates, keys=["user_id"], value_cols=["n_events"])
+
+
+Q29_SQL = """
+WITH s AS (
+  SELECT user_id, COUNT(*) AS n_events,
+         CAST(floor(epoch(MAX(ts))) AS BIGINT) AS updated_at
+  FROM events WHERE ts < TIMESTAMP '2024-01-15 00:00:00' GROUP BY user_id),
+u AS (
+  SELECT user_id, COUNT(*) AS n_events,
+         CAST(floor(epoch(MAX(ts))) AS BIGINT) AS updated_at
+  FROM events WHERE ts >= TIMESTAMP '2024-01-15 00:00:00' GROUP BY user_id)
+SELECT COALESCE(u.user_id, s.user_id) AS user_id,
+       CASE WHEN u.user_id IS NOT NULL THEN u.n_events ELSE s.n_events END AS n_events,
+       CASE WHEN u.user_id IS NOT NULL THEN u.updated_at ELSE s.updated_at END AS updated_at
+FROM s FULL OUTER JOIN u ON s.user_id = u.user_id
+"""
+
+
+# --------------------------------------------------------------------------
+# q108: enrich-with-state left-outer + per-column coalesce (the last §2.3
+# join family that was pytest-only — VERDICT r04 item #5)
+# --------------------------------------------------------------------------
+
+
+def q108_enrich_with_state(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """State-enrichment gate (reference request_set_cache.py:207-251): the
+    batch (per-user aggregates over odd event_ids) is LEFT-joined to a
+    planted STALE cache (per-user aggregates over even event_ids, with
+    every user_id % 3 == 0 evicted so the NULL-state path is exercised),
+    state columns arriving old_*-prefixed, then the canonical per-column
+    coalesce folds prior state into running totals. Hash-gates both the
+    join's null semantics and the coalesce arithmetic."""
+    ev = _t(spark, sf_dir, "events")
+    batch = (
+        ev.where(F.col("event_id") % 2 == 1)
+        .groupBy("user_id")
+        .agg(
+            F.count(F.lit(1)).alias("n_events"),
+            F.round(F.sum("value"), 6).alias("sum_value"),
+        )
+    )
+    stale = (
+        ev.where((F.col("event_id") % 2 == 0) & (F.col("user_id") % 3 != 0))
+        .groupBy("user_id")
+        .agg(
+            F.count(F.lit(1)).alias("n_events"),
+            F.round(F.sum("value"), 6).alias("sum_value"),
+        )
+    )
+    enriched = enrich_with_state(
+        batch, stale, keys=["user_id"], state_cols=["n_events", "sum_value"]
+    )
+    return enriched.select(
+        "user_id",
+        "n_events",
+        "old_n_events",
+        (F.col("n_events") + F.coalesce(F.col("old_n_events"), F.lit(0)))
+        .cast("long")
+        .alias("total_events"),
+        F.round(
+            F.col("sum_value") + F.coalesce(F.col("old_sum_value"), F.lit(0.0)), 6
+        ).alias("total_value"),
+    )
+
+
+Q108_SQL = """
+WITH batch AS (
+  SELECT user_id, COUNT(*) AS n_events,
+         ROUND(SUM(value), 6) AS sum_value
+  FROM events WHERE event_id % 2 = 1 GROUP BY user_id),
+stale AS (
+  SELECT user_id, COUNT(*) AS n_events,
+         ROUND(SUM(value), 6) AS sum_value
+  FROM events WHERE event_id % 2 = 0 AND user_id % 3 <> 0 GROUP BY user_id)
+SELECT b.user_id,
+       b.n_events,
+       s.n_events AS old_n_events,
+       CAST(b.n_events + COALESCE(s.n_events, 0) AS BIGINT) AS total_events,
+       ROUND(b.sum_value + COALESCE(s.sum_value, 0.0), 6) AS total_value
+FROM batch b LEFT JOIN stale s USING (user_id)
+"""

@@ -15,12 +15,17 @@ exactly the pruning the reference did manually with a semi-join.
 
 from __future__ import annotations
 
+import shutil
+import tempfile
 from typing import Iterable, Iterator, Tuple
 
 import pandas as pd
-from pyspark.sql import DataFrame
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+
+from baskerville_spark.gates.fixtures import _drain_to_memory, _split_events_mod3, _t
 
 OUTPUT_SCHEMA = T.StructType(
     [
@@ -106,3 +111,127 @@ def incremental_group_stats(stream: DataFrame, key_col: str) -> DataFrame:
     return src.groupBy("key").applyInPandasWithState(
         _update, OUTPUT_SCHEMA, STATE_SCHEMA, "update", GroupStateTimeout.NoTimeout
     )
+
+
+def q23_streaming_window_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Structured Streaming tumbling-window agg (SURVEY §2.10), driven to
+    completion over the events parquet; result equals the batch oracle."""
+    e_schema = _t(spark, sf_dir, "events").schema
+    stream = (
+        spark.readStream.schema(e_schema)
+        .option("pathGlobFilter", "events.parquet")  # stream source needs a dir
+        .parquet(sf_dir)
+        .withColumn("ts", F.col("ts").cast("timestamp"))  # NTZ → event-time type
+        .withWatermark("ts", "1 hour")
+        .groupBy(F.window("ts", "1 hour"), "event_type")
+        .agg(F.count(F.lit(1)).alias("cnt"))
+    )
+    out = _drain_to_memory(spark, stream, "complete", "q23")
+    return out.select(
+        F.unix_timestamp(F.col("window.start")).alias("bucket_epoch"),
+        "event_type",
+        "cnt",
+    )
+
+
+Q23_SQL = """
+SELECT CAST(floor(epoch(date_trunc('hour', ts))) AS BIGINT) AS bucket_epoch,
+       event_type, COUNT(*) AS cnt
+FROM events GROUP BY 1, 2
+"""
+
+
+def q39_streaming_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Structured Streaming dropDuplicates with watermark (SURVEY §2.10
+    exactly-once dedup shape): the deduped (user, type) stream aggregates to
+    distinct-user counts per type, equal to the batch DISTINCT oracle."""
+    e_schema = _t(spark, sf_dir, "events").schema
+    stream = (
+        spark.readStream.schema(e_schema)
+        .option("pathGlobFilter", "events.parquet")
+        .parquet(sf_dir)
+        .withColumn("ts", F.col("ts").cast("timestamp"))
+        .withWatermark("ts", "1 hour")
+        .dropDuplicates(["user_id", "event_type"])
+        .select("user_id", "event_type")
+    )
+    return (
+        _drain_to_memory(spark, stream, "append", "q39")
+        .groupBy("event_type")
+        .agg(F.count(F.lit(1)).alias("n_users"))
+    )
+
+
+Q39_SQL = """
+SELECT event_type, COUNT(DISTINCT user_id) AS n_users FROM events GROUP BY event_type
+"""
+
+
+# ---------------------------------------------------------------------------
+# Q64 — stateful streaming stats (applyInPandasWithState; the reference's
+#       two-layer request-set cache, request_set_cache.py:318-434, as a
+#       native stateful operator)
+# ---------------------------------------------------------------------------
+
+def q64_stateful_stream_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """`incremental_group_stats` under the hash gate: events stream in as
+    three micro-batches (event_id mod 3, one file per trigger) through the
+    applyInPandasWithState operator; each key's FINAL emission must carry
+    lifetime stats identical to DuckDB aggregating the undivided table.
+
+    n_batches (the reference's subset_count, base_spark.py:849-852) is also
+    hashed — closed form: COUNT(DISTINCT event_id % 3) per user. The mean
+    is not hashed directly (2-dp data parks true means on rounding-boundary
+    ties — see q62); the sum it encodes is recovered as mean·n and rounded
+    where it is boundary-safe. min/max are exact doubles on both sides.
+    """
+    e = _t(spark, sf_dir, "events")
+    # PRECONDITION for the sum recovery below: mean_value divides by the
+    # NON-NULL count (nv) while n_total counts all rows, so
+    # mean*n_total == SUM(value) only when the column is null-free —
+    # fail loudly instead of hash-mismatching mysteriously
+    if e.where(F.col("value").isNull()).limit(1).count() > 0:
+        raise RuntimeError(
+            "q64 requires a null-free value column (value_sum = mean*n_total)"
+        )
+    tmp = tempfile.mkdtemp(prefix="bsk_q64_")
+    src = f"{tmp}/src"
+    _split_events_mod3(e.select("event_id", "user_id", "value"), src)
+    stream = (
+        spark.readStream.schema("user_id long, value double")
+        .option("maxFilesPerTrigger", 1)
+        .parquet(src)
+    )
+    out = incremental_group_stats(stream, key_col="user_id")
+    rows = _drain_to_memory(spark, out, "update", "q64")
+
+    shutil.rmtree(tmp, ignore_errors=True)  # result lives in the memory sink
+    w = Window.partitionBy("key").orderBy(
+        F.desc("n_batches"), F.desc("n_total")
+    )
+    last = rows.withColumn("rn", F.row_number().over(w)).where("rn = 1")
+    if last.where("n_batches < 2").limit(1).count() > 0:
+        # every sf tier has >=7 rows per (user, batch): a key that never
+        # merged across batches means the stream didn't micro-batch
+        raise RuntimeError("a key saw fewer than 2 micro-batches")
+    return last.select(
+        "key",
+        "n_total",
+        "n_batches",
+        "min_value",
+        "max_value",
+        F.round(F.col("mean_value") * F.col("n_total"), 4)
+        .cast("float")
+        .alias("value_sum"),
+    )
+
+
+Q64_SQL = """
+SELECT CAST(user_id AS VARCHAR) AS key,
+       CAST(COUNT(*) AS BIGINT) AS n_total,
+       CAST(COUNT(DISTINCT event_id % 3) AS BIGINT) AS n_batches,
+       MIN(value) AS min_value,
+       MAX(value) AS max_value,
+       CAST(ROUND(SUM(value), 4) AS REAL) AS value_sum
+FROM events GROUP BY user_id
+"""

@@ -25,8 +25,10 @@ read as "no data" — the honest answer).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+
+from baskerville_spark.gates.fixtures import _t
 
 #: carried slots ``gap_fill`` emits after an observation, at most
 MAX_FILL = 8
@@ -82,3 +84,63 @@ def gap_fill(
         *value_cols,
         (F.col("grid_slot") == F.col("__slot")).alias("is_observed"),
     )
+
+
+# --------------------------------------------------------------------------
+# q112: gap-fill to a regular grid — forward fill WITHOUT a calendar join
+# (each observation explodes its own fill span off one lead() window).
+# --------------------------------------------------------------------------
+
+
+def q112_gap_fill(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Gap-fill gate: per-user 6-hour grid over the events table (slots =
+    epoch − epoch % 21600), latest-in-slot by event_id, gaps forward-filled
+    up to timegrid.MAX_FILL = 8 slots (longer gaps stay absent — bounded row
+    amplification under the hash). value AND event_type carry; is_observed
+    marks real vs filled rows."""
+    step = 21600
+    ev = _t(spark, sf_dir, "events").select(
+        "user_id",
+        "event_id",
+        "value",
+        "event_type",
+        (
+            F.unix_timestamp(F.col("ts").cast("timestamp"))
+            - F.unix_timestamp(F.col("ts").cast("timestamp")) % step
+        ).alias("slot"),
+    )
+    return gap_fill(
+        ev,
+        keys=["user_id"],
+        slot_col="slot",
+        value_cols=["value", "event_type"],
+        step=step,
+        order_col="event_id",
+    )
+
+
+Q112_SQL = """
+WITH b AS (
+  SELECT user_id, event_id, value, event_type,
+         CAST(floor(epoch(ts)) AS BIGINT)
+           - CAST(floor(epoch(ts)) AS BIGINT) % 21600 AS slot
+  FROM events),
+obs AS (
+  SELECT user_id, slot,
+         MAX_BY(value, event_id) AS value,
+         MAX_BY(event_type, event_id) AS event_type
+  FROM b GROUP BY user_id, slot),
+nx AS (
+  SELECT *, LEAD(slot) OVER (PARTITION BY user_id ORDER BY slot) AS nxt
+  FROM obs),
+sel AS (
+  SELECT user_id, value, event_type, slot,
+         unnest(generate_series(
+             slot,
+             LEAST(COALESCE(nxt - 21600, slot), slot + 8 * 21600),
+             21600)) AS grid_slot
+  FROM nx)
+SELECT user_id, grid_slot, value, event_type,
+       grid_slot = slot AS is_observed
+FROM sel
+"""
