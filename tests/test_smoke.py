@@ -59,14 +59,14 @@ def test_ml_prep_semantics(spark):
 
     import __spark_entry__ as m
 
-    sf = "/root/testdata/sf0.001"
-    idx = m.q54_string_index(spark, sf).collect()
+    sf, qs = "/root/testdata/sf0.001", m.queries()
+    idx = qs["q54_string_index"](spark, sf).collect()
     by_rank = sorted(idx, key=lambda r: r["label_index"])
     assert [r["label_index"] for r in by_rank] == list(range(len(by_rank)))
     for a, b in zip(by_rank, by_rank[1:]):
         assert (a["n"], b["label"]) >= (b["n"], a["label"])  # freq desc, label asc
 
-    scaled = m.q53_standard_scale(spark, sf).collect()
+    scaled = qs["q53_standard_scale"](spark, sf).collect()
     assert len(scaled) == 100
     for r in scaled:
         for c in ("l_quantity_scaled", "l_extendedprice_scaled", "l_discount_scaled"):
@@ -80,7 +80,7 @@ def test_feature_loop_gate_invariants(spark):
     the pytest suite."""
     import __spark_entry__ as m
 
-    out = m.q62_feature_loop(spark, "/root/testdata/sf0.001").collect()
+    out = m.queries()["q62_feature_loop"](spark, "/root/testdata/sf0.001").collect()
     users = {r["user_id"] for r in out}
     assert len(out) == len(users) > 0
     assert all(r["request_total"] > 0 for r in out)
@@ -91,7 +91,7 @@ def test_sensitive_roundtrip_gate(spark):
     split/stash/merge loop exactly once with its sensitive columns."""
     import __spark_entry__ as m
 
-    out = m.q63_sensitive_roundtrip(spark, "/root/testdata/sf0.001")
+    out = m.queries()["q63_sensitive_roundtrip"](spark, "/root/testdata/sf0.001")
     n = out.count()
     assert n == 1000
     assert out.select("event_id").distinct().count() == n
@@ -366,17 +366,13 @@ def test_planted_audio_gates_match_oracles(spark, tmp_path):
 def test_shared_clip_fixture_keys_on_whole_config(monkeypatch):
     """Configs that differ in any GenConfig field get their own fixture;
     an equal config reuses the generated one."""
-    from baskerville_spark import generator
+    from baskerville_spark.gates import fixtures as m
     from baskerville_spark.generator import GenConfig
-
-    import __spark_entry__ as m
 
     written = []
     monkeypatch.setattr(m, "_CLIP_FIXTURES", {})
-    monkeypatch.setattr(
-        generator, "write_clips", lambda spark, path, cfg: written.append(cfg)
-    )
-    monkeypatch.setattr(generator, "write_transcript_ref", lambda *a: None)
+    monkeypatch.setattr(m, "write_clips", lambda spark, path, cfg: written.append(cfg))
+    monkeypatch.setattr(m, "write_transcript_ref", lambda *a: None)
 
     a = m._shared_clip_fixture(None, GenConfig(1000, 4))
     assert m._shared_clip_fixture(None, GenConfig(1000, 4)) == a
@@ -393,7 +389,7 @@ def test_stream_shuffle_refuses_a_second_thread(spark):
 
     import pytest
 
-    import __spark_entry__ as m
+    from baskerville_spark.gates import fixtures as m
 
     batch = spark.conf.get("spark.sql.shuffle.partitions")
     entered, leave, errors = threading.Event(), threading.Event(), []
