@@ -32,7 +32,6 @@ from baskerville_spark.gates import (
     evolution,
     feature_loop,
     features,
-    fixtures,
     gbm,
     geo,
     graph,
@@ -73,7 +72,7 @@ def entry(spark: SparkSession) -> DataFrame:
 # ---------------------------------------------------------------------------
 # Gate registry: one (callable, oracle) row per gate, in driver order. A
 # gate's key is its callable's __name__; its oracle is the DuckDB SQL string
-# or a zero-arg builder that oracle_sql() calls. Adding a gate adds one row.
+# its gates/ module builds at import. Adding a gate adds one row.
 #
 # Driver order: the correctness driver consumes queries() in insertion order
 # and verifies a bounded prefix per round. q21 leads: bench.py materializes
@@ -86,12 +85,12 @@ def entry(spark: SparkSession) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 _GATES = (
-    (validation.q21_clip_validation, fixtures._q21_sql),
+    (validation.q21_clip_validation, validation.Q21_SQL),
     (sampling.q100_corpus_split, sampling.Q100_SQL),
     (layout.q101_file_skipping, layout.Q101_SQL),
     (layout.q102_zorder, layout.Q102_SQL),
     (layout.q103_compaction_plan, layout.Q103_SQL),
-    (drift.q104_streaming_rolling_psi, drift._q104_sql),
+    (drift.q104_streaming_rolling_psi, drift.Q104_SQL),
     (audio_quality.q105_split_on_silence, audio_quality.Q105_SQL),
     (text.q106_transcript_edit_distance, text.Q106_SQL),
     (audio_quality.q107_concat_roundtrip, audio_quality.Q107_SQL),
@@ -107,14 +106,14 @@ _GATES = (
     (audio_quality.q117_vad_stats, audio_quality.Q117_SQL),
     (validation.q118_constraint_suite, validation.Q118_SQL),
     (validation.q119_incremental_stats, validation.Q119_SQL),
-    (validation.q120_histogram_drift_state, validation._q120_sql),
-    (validation.q121_state_table_stats, validation._q121_sql),
-    (audio_state.q122_audio_decode_state, audio_state._q122_sql),
+    (validation.q120_histogram_drift_state, validation.Q120_SQL),
+    (validation.q121_state_table_stats, validation.Q121_SQL),
+    (audio_state.q122_audio_decode_state, audio_state.Q122_SQL),
     (validation.q123_streaming_state_ingest, validation.Q123_SQL),
     (evolution.q124_schema_evolution, evolution.Q124_SQL),
     (completeness.q125_partition_completeness, completeness.Q125_SQL),
     (snapshot.q126_row_level_diff, snapshot.Q126_SQL),
-    (drift.q127_psi_attribution, drift._q127_sql),
+    (drift.q127_psi_attribution, drift.Q127_SQL),
     (history.q128_metric_anomalies, history.Q128_SQL),
     (suggest.q129_suggest_constraints, suggest.Q129_SQL),
     (suggest.q130_functional_deps, suggest.Q130_SQL),
@@ -126,7 +125,7 @@ _GATES = (
     (validation.q136_spearman, validation.Q136_SQL),
     (validation.q137_mutual_info, validation.Q137_SQL),
     (validation.q138_benford, validation.Q138_SQL),
-    (drift.q139_rolling_chi2, drift._q139_sql),
+    (drift.q139_rolling_chi2, drift.Q139_SQL),
     (sampling.q140_token_budget, sampling.Q140_SQL),
     (audio_dedup.q141_label_conflicts, audio_dedup.Q141_SQL),
     (drift.q142_wasserstein_drift, drift.Q142_SQL),
@@ -145,28 +144,28 @@ _GATES = (
     (web.q10_incident_detection, web.Q10_SQL),
     (text.q11_fingerprints, text.Q11_SQL),
     (text.q12_quality_features, text.Q12_SQL),
-    (text.q13_lang_id, text._langid_sql),
+    (text.q13_lang_id, text.Q13_SQL),
     (similarity.q14_ann_topk, similarity.Q14_SQL),
     (dedup.q15_ngram_jaccard, dedup.Q15_SQL),
     (dedup.q16_exact_dups, dedup.Q16_SQL),
     (web.q17_pricing_summary, web.Q17_SQL),
     (web.q18_top_revenue_orders, web.Q18_SQL),
     (dedup.q19_minhash_pairs, dedup.Q19_SQL),
-    (dedup.q20_simhash, dedup._q20_sql),
+    (dedup.q20_simhash, dedup.Q20_SQL),
     (similarity.q22_vector_pairs, similarity.Q22_SQL),
     (stateful.q23_streaming_window_counts, stateful.Q23_SQL),
     (web.q24_sessionization, web.Q24_SQL),
     (web.q25_json_props, web.Q25_SQL),
     (web.q26_rollup_counts, web.Q26_SQL),
     (web.q27_asof_prev_click, web.Q27_SQL),
-    (sampling.q28_stratified_sample, sampling._q28_sql),
+    (sampling.q28_stratified_sample, sampling.Q28_SQL),
     (state.q29_state_merge, state.Q29_SQL),
     (web.q30_cube_counts, web.Q30_SQL),
     (web.q31_heavy_both_types, web.Q31_SQL),
     (similarity.q32_srp_lsh_pairs, similarity.Q32_SQL),
     (web.q33_first_last_touch, web.Q33_SQL),
     (web.q34_map_features, web.Q34_SQL),
-    (dedup.q35_simhash_near_dups, dedup._q35_sql),
+    (dedup.q35_simhash_near_dups, dedup.Q35_SQL),
     (web.q36_session_window, web.Q36_SQL),
     (geo.q37_geo_localize, geo.Q37_SQL),
     (similarity.q38_ivf_topk, similarity.Q38_SQL),  # exact top-k on the planted-cluster corpus
@@ -175,9 +174,9 @@ _GATES = (
     (multimodal.q41_video_frame_sample, multimodal.Q41_SQL),
     (uniqueness.q42_dup_exemplars, uniqueness.Q42_SQL),
     (web.q43_first_last_agg, web.Q33_SQL),  # same semantics, single-shuffle plan
-    (validation.q44_drift_verdicts, validation._q44_sql),
+    (validation.q44_drift_verdicts, validation.Q44_SQL),
     (kafka_shaped.q45_streaming_kafka_shaped, kafka_shaped.Q45_SQL),
-    (validation.q46_sketch_accuracy, validation._q46_sql),
+    (validation.q46_sketch_accuracy, validation.Q46_SQL),
     (registry.q47_jdbc_segment_stats, registry.Q47_SQL),
     (validation.q48_ref_integrity, validation.Q48_SQL),
     (schema_check.q49_schema_enforce, schema_check.Q49_SQL),
@@ -193,7 +192,7 @@ _GATES = (
     (classify.q59_anomaly_thresholds, classify.Q59_SQL),
     (web.q60_challenge_commands, web.Q60_SQL),
     # same closed-form grid as q21: resume must reproduce the one-shot run
-    (validation.q61_resume_verdicts, fixtures._q21_sql),
+    (validation.q61_resume_verdicts, validation.Q21_SQL),
     (feature_loop.q62_feature_loop, feature_loop.Q62_SQL),
     (sensitive.q63_sensitive_roundtrip, sensitive.Q63_SQL),
     (stateful.q64_stateful_stream_stats, stateful.Q64_SQL),
@@ -210,7 +209,7 @@ _GATES = (
     (consistency.q75_speaking_rate, consistency.Q75_SQL),
     (dedup.q76_decontamination, dedup.Q76_SQL),
     (packing.q77_sequence_packing, packing.Q77_SQL),
-    (sampling.q78_mixture_sample, sampling._q78_sql),
+    (sampling.q78_mixture_sample, sampling.Q78_SQL),
     (packing.q79_chunk_documents, packing.Q79_SQL),
     (text.q80_vocab_oov, text.Q80_SQL),
     (stats.q81_robust_outliers, stats.Q81_SQL),
@@ -227,10 +226,10 @@ _GATES = (
     (audio_quality.q92_pitch, audio_quality.Q92_SQL),
     (bloom.q93_bloom_semi, bloom.Q93_SQL),
     (snapshot.q94_snapshot_diff, snapshot.Q94_SQL),
-    (snapshot.q95_incremental_revalidation, snapshot._q95_sql),
-    (drift.q96_rolling_psi, drift._q96_sql),
-    (drift.q97_rolling_ks, drift._q97_sql),
-    (validation.q98_quarantine_routing, validation._q98_sql),
+    (snapshot.q95_incremental_revalidation, snapshot.Q95_SQL),
+    (drift.q96_rolling_psi, drift.Q96_SQL),
+    (drift.q97_rolling_ks, drift.Q97_SQL),
+    (validation.q98_quarantine_routing, validation.Q98_SQL),
     (dedup.q99_keep_canonical, dedup.Q99_SQL),
 )
 
@@ -240,8 +239,4 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
 
 def oracle_sql() -> dict[str, str]:
-    """Every gate's oracle SQL; builders run per call, not at import."""
-    return {
-        fn.__name__: oracle() if callable(oracle) else oracle
-        for fn, oracle in _GATES
-    }
+    return {fn.__name__: sql for fn, sql in _GATES}

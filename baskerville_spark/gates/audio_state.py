@@ -170,3 +170,6 @@ SELECT part_id,
        TRUE AS sum_abs_match
 FROM fl GROUP BY part_id
 """
+
+
+Q122_SQL = _q122_sql()

@@ -667,8 +667,7 @@ WITH tok AS (
 )"""
 
 
-def _q20_sql() -> str:
-    return _simhash_cte() + "\nSELECT doc_id, simhash FROM sim"
+Q20_SQL = _simhash_cte() + "\nSELECT doc_id, simhash FROM sim"
 
 
 def q35_simhash_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -684,8 +683,7 @@ def q35_simhash_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     return simhash_near_dups(d)
 
 
-def _q35_sql() -> str:
-    return _simhash_cte() + """
+Q35_SQL = _simhash_cte() + """
 SELECT a.doc_id AS id_a, b.doc_id AS id_b,
        CAST(bit_count(xor(a.simhash, b.simhash)) AS INT) AS hamming
 FROM sim a JOIN sim b ON a.doc_id < b.doc_id

@@ -537,6 +537,9 @@ FROM c cur JOIN c prv ON cur.window_id = prv.window_id + 1
 """
 
 
+Q96_SQL = _q96_sql()
+
+
 # --------------------------------------------------------------------------
 # q97: window-over-window rolling binned KS (PSI's companion)
 # --------------------------------------------------------------------------
@@ -582,6 +585,9 @@ SELECT cur.window_id AS window_id,
        CASE WHEN ({ks}) <= {KS_THRESHOLD} THEN 1 ELSE 0 END AS passed
 FROM c cur JOIN c prv ON cur.window_id = prv.window_id + 1
 """
+
+
+Q97_SQL = _q97_sql()
 
 
 # --------------------------------------------------------------------------
@@ -630,11 +636,10 @@ def q104_streaming_rolling_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _q104_sql() -> str:
-    return _q96_sql(
-        window_expr="CAST(date_diff('day', DATE '1970-01-01',"
-        " CAST(ts AS DATE)) AS INT)"
-    )
+Q104_SQL = _q96_sql(
+    window_expr="CAST(date_diff('day', DATE '1970-01-01',"
+    " CAST(ts AS DATE)) AS INT)"
+)
 
 
 # --------------------------------------------------------------------------
@@ -685,6 +690,9 @@ SELECT part_id, 'psi:{col}' AS check_name, CAST({i} AS INT) AS bin_idx,
 FROM agg""")
     union = "\nUNION ALL\n".join(blocks)
     return f"{_drift_agg_sql()}\n{union}\n"
+
+
+Q127_SQL = _q127_sql()
 
 
 def q133_mannwhitney(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -783,6 +791,9 @@ SELECT cur.window_id AS window_id,
          AS passed
 FROM c cur JOIN c prv ON cur.window_id = prv.window_id + 1
 """
+
+
+Q139_SQL = _q139_sql()
 
 
 # --------------------------------------------------------------------------

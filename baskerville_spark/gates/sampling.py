@@ -255,6 +255,9 @@ GROUP BY event_type
 """
 
 
+Q28_SQL = _q28_sql()
+
+
 # --------------------------------------------------------------------------
 # q78: domain-mixture rebalancing sample
 # --------------------------------------------------------------------------
@@ -290,6 +293,9 @@ FROM documents d JOIN thr USING (source)
 WHERE ('0x' || substr(md5(CAST(d.doc_id AS VARCHAR)), 1, 15))::BIGINT % 1000000
       < thr.thr
 """
+
+
+Q78_SQL = _q78_sql()
 
 
 def q100_corpus_split(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -291,8 +291,7 @@ def q95_incremental_revalidation(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _gate_tmp_detach(_verdict_grid(verdicts), tmp)
 
 
-def _q95_sql() -> str:
-    return _q21_sql(n_rows=1250, n_parts=5)
+Q95_SQL = _q21_sql(n_rows=1250, n_parts=5)
 
 
 # --------------------------------------------------------------------------

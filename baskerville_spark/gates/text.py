@@ -376,6 +376,9 @@ SELECT doc_id, {case_sql} AS pred_lang, {greatest} AS lang_hits FROM s
 """
 
 
+Q13_SQL = _langid_sql()
+
+
 def q52_heavy_hitter_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Corpus-level heavy hitters: top-20 whitespace tokens by document
     frequency — the vocabulary/stop-word probe every text pipeline runs

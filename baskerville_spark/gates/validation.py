@@ -36,6 +36,7 @@ from baskerville_spark.gates.fixtures import (
     _drift_fixture,
     _drift_frac,
     _gate_tmp_detach,
+    _q21_sql,
     _shared_clip_fixture,
     _split_events_mod3,
     _stream_shuffle,
@@ -127,6 +128,9 @@ def q21_clip_validation(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out
 
 
+Q21_SQL = _q21_sql()
+
+
 def q44_drift_verdicts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PSI + binned-KS drift verdicts against a LITERAL baseline snapshot
     (checks/drift.py math, previously pytest-only — this gate oracle-checks
@@ -184,6 +188,9 @@ SELECT part_id, '{metric}:{col}' AS check_name,
 FROM agg""")
     union = "\nUNION ALL\n".join(blocks)
     return f"{_drift_agg_sql()}\n{union}\n"
+
+
+Q44_SQL = _q44_sql()
 
 
 # ---------------------------------------------------------------------------
@@ -310,6 +317,9 @@ def _q46_sql() -> str:
                 f"FROM lineitem"
             )
     return "\nUNION ALL\n".join(parts)
+
+
+Q46_SQL = _q46_sql()
 
 
 # ---------------------------------------------------------------------------
@@ -490,10 +500,9 @@ def q98_quarantine_routing(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out
 
 
-def _q98_sql() -> str:
-    """Violating-id set from the generator mods (same flag algebra as
-    _q21_sql), pushed through the dup-id aliasing to physical rows."""
-    return f"""
+# Violating-id set from the generator mods (same flag algebra as
+# _q21_sql), pushed through the dup-id aliasing to physical rows.
+Q98_SQL = f"""
 WITH idx AS (SELECT unnest(generate_series(0, 999)) AS i),
 fl AS (
   SELECT i,
@@ -838,6 +847,9 @@ FROM kk
 """
 
 
+Q120_SQL = _q120_sql()
+
+
 # --------------------------------------------------------------------------
 # q121: runner-integrated mergeable states — the resumable protocol itself
 # (plant-done → crash → resume, q61's shape) now WRITES per-partition state
@@ -944,6 +956,9 @@ SELECT CAST(COUNT(*) AS BIGINT) AS n_rows,
        TRUE AS distinct_ok
 FROM c
 """
+
+
+Q121_SQL = _q121_sql()
 
 
 # --------------------------------------------------------------------------
