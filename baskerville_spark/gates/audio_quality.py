@@ -644,7 +644,7 @@ def q83_loudness_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact peak/RMS dBFS and clipped-sample counts are closed-form
     (level v = min(500 + (i*613)%40000, 32767): peak = rms = v, clipped
     iff v hits full scale). The measurement path is the REAL one — encode
-    to pcm_s16le, Arrow decode, per-clip stats (functions/audio_quality) —
+    to pcm_s16le, Arrow decode, per-clip stats (``audio_loudness_stats``) —
     and the gate emits exact integers plus |measured − analytic| < 1e-9
     booleans (the q46 bounded-verdict pattern); the oracle rebuilds the
     integer columns arithmetically and pins the booleans TRUE."""
@@ -999,7 +999,7 @@ FROM idx
 
 
 # --------------------------------------------------------------------------
-# q105/q106: interior silence splitting + edit-distance transcript QA
+# q105: interior silence splitting
 # --------------------------------------------------------------------------
 
 
@@ -1210,7 +1210,7 @@ FROM s
 # square-wave clips around a known integer bias v (samples alternate
 # v+a / v−a over an even count, so the exact mean IS v); the measurement
 # path is the REAL one — encode pcm_s16le, Arrow decode, per-clip mean
-# (functions/audio_quality.audio_dc_offset) — and v/32768 is exact in
+# (audio_dc_offset) — and v/32768 is exact in
 # float64 (power-of-two denominator), so the gate emits the raw doubles
 # and the oracle rebuilds them arithmetically; no tolerance booleans
 # needed. dc_suspect is JVM-side Column algebra over dc_frac (the policy

@@ -99,7 +99,7 @@ def merge_decode_states(states: DataFrame) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# q122: mergeable DECODE state (checks/audio_state.py) — the payload analog
+# q122: mergeable DECODE state (decode_state) — the payload analog
 # of q119/q121: each ingest batch is decoded EXACTLY ONCE (mapInArrow, no
 # payload shuffle) into a tiny additive state row; folding three batch
 # states must equal the one-pass state bit-for-bit (counts, exact sample

@@ -138,7 +138,6 @@ def apply_bpe(docs: DataFrame, merges: DataFrame) -> DataFrame:
     rank_of = {pair: i for i, pair in enumerate(ranked)}
     docs_schema = docs.schema
 
-    import pandas as pd  # noqa: F401
     from pyspark.sql import types as T
 
     out_schema = T.StructType(
@@ -182,7 +181,7 @@ def apply_bpe(docs: DataFrame, merges: DataFrame) -> DataFrame:
 
 # --------------------------------------------------------------------------
 # q114: distributed BPE merge training — the tokenizer-TRAINING step
-# (functions/bpe.py): corpus → word-frequency table once, then per round
+# (``train_bpe_merges``): corpus → word-frequency table once, then per round
 # one pair aggregate + one pure-Column fold rewrite, _Ckpt-truncated.
 # --------------------------------------------------------------------------
 
@@ -221,7 +220,7 @@ FROM idx
 
 # --------------------------------------------------------------------------
 # q115: BPE apply — tokenize with the trained merge table (train→apply
-# loop closed; the regex token_count_bpe of functions/text.py is the
+# loop closed; the regex token_count_bpe of gates/text.py is the
 # approximation, this is the real rank-priority tokenizer).
 # --------------------------------------------------------------------------
 

@@ -68,8 +68,7 @@ def q59_anomaly_thresholds(spark: SparkSession, sf_dir: str) -> DataFrame:
     incident set is the users whose error ratio exceeds 0.21 (the
     incident detector itself is q10/q44's subject). The reference builds
     an isin() literal from a driver-collected host list; this rides a
-    broadcast left join instead — same verdicts, no driver round-trip
-    (ml/classify.py)."""
+    broadcast left join instead — same verdicts, no driver round-trip."""
     e = _t(spark, sf_dir, "events")
     ratio = (
         F.count(F.when(F.col("event_type") == "error", 1)).cast("double")

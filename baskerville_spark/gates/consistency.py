@@ -301,7 +301,7 @@ def q75_speaking_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     [20, 200] fails the partition (the cheap transcript-audio alignment
     screen run before any ASR verify). ONE conditional-sum aggregate keyed
     on part_id — verdict shape, exercising the verdicts path of
-    checks/consistency.py under the oracle (q74 covers the listing path)."""
+    speaking_rate_verdicts under the oracle (q74 covers the listing path)."""
     v = speaking_rate_verdicts(_meta_clips(spark))
     return v.select(
         "part_id",
@@ -334,7 +334,7 @@ FROM flags GROUP BY part_id
 
 # --------------------------------------------------------------------------
 # q143: partition-spill integrity — keys physically present in more than
-# one table partition (checks/consistency.partition_spill). Distinct from
+# one table partition (partition_spill). Distinct from
 # uniqueness q09/q42: a within-partition duplicate (the generator's
 # dup-renamed rows share the SAME partition by construction) is NOT a
 # spill; the check flags exactly the planted cross-partition copies. The
@@ -382,7 +382,7 @@ WHERE s % 23 = 11 AND NOT dup_renamed
 
 
 # --------------------------------------------------------------------------
-# q144: out-of-order ingestion rate (checks/consistency.out_of_order_stats)
+# q144: out-of-order ingestion rate (out_of_order_stats)
 # — per user, the fraction of events whose event time runs behind the
 # running max of everything already ingested (ordered by event_id): the
 # measured lateness a streaming watermark must absorb. A 2-day backdate is

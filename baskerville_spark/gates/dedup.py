@@ -552,7 +552,7 @@ def _docs_wide(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Q15/Q16 — dedup (functions/dedup.py)
+# Q15/Q16 — dedup
 # ---------------------------------------------------------------------------
 
 def q15_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -599,7 +599,7 @@ GROUP BY md5(text) HAVING COUNT(*) > 1
 
 
 # ---------------------------------------------------------------------------
-# Q19-Q21, Q23 — MinHash/SimHash sketches, clip validation, streaming windows
+# Q19/Q20 — MinHash/SimHash sketches
 # ---------------------------------------------------------------------------
 
 def q19_minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -692,8 +692,8 @@ WHERE bit_count(xor(a.simhash, b.simhash)) <= 3
 
 
 # ---------------------------------------------------------------------------
-# Q51/Q52 — normalization-aware near-exact dedup and heavy-hitter tokens
-#           (training-data staples beyond byte-identical dedup)
+# Q51 — normalization-aware near-exact dedup (a training-data staple
+#       beyond byte-identical dedup)
 # ---------------------------------------------------------------------------
 
 def q51_normalized_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -753,7 +753,7 @@ SELECT text_hash, dup_count, array_to_string(id_list, ',') AS ids FROM grp
 
 # ---------------------------------------------------------------------------
 # Q69 — TF-IDF cosine similarity pairs via an inverted term index
-#       (functions/dedup.tfidf_cosine_pairs — sparse lexical similarity,
+#       (tfidf_cosine_pairs — sparse lexical similarity,
 #       no embeddings; the max_df stop-term guard is ACTIVE: the
 #       generator's tiny shared vocabulary appears in ~every doc and is
 #       dropped wholesale, which is exactly the guard's job at scale)
@@ -837,7 +837,7 @@ WHERE ROUND(dot / (na * nb), 4) >= 0.3
 
 # ---------------------------------------------------------------------------
 # Q70 — asymmetric containment dedup (doc ⊇ excerpt):
-#       functions/dedup.shingle_containment_pairs
+#       shingle_containment_pairs
 # ---------------------------------------------------------------------------
 
 def q70_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -923,7 +923,7 @@ GROUP BY s.doc_id
 
 
 # --------------------------------------------------------------------------
-# q99/q100: dedup survivor selection + deterministic corpus splits
+# q99: dedup survivor selection
 # --------------------------------------------------------------------------
 
 

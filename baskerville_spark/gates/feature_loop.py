@@ -149,7 +149,7 @@ def q62_feature_loop(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The client-pipeline loop END-TO-END under the hash gate: events split
     into three deterministic micro-batches (event_id mod 3), streamed
     file-per-trigger through ``run_feature_loop`` (GenerateFeatures →
-    merge-with-cache → atomic republish, runtime/feature_loop.py), and the
+    merge-with-cache → atomic republish), and the
     FINAL cache must hash-equal a one-shot SQL computation over all events.
 
     This is the strongest claim about the merge algebra: q58 grades ONE

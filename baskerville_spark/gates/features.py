@@ -430,7 +430,7 @@ FROM events GROUP BY event_type
 # ---------------------------------------------------------------------------
 # Q57 — the COMPLETE reference feature vector in one funnel
 #       (GenerateFeatures: base_spark.py:445-458 composing the 39 feature
-#        classes; SURVEY §2.4/§2.8 — see functions/features.py for the
+#        classes; SURVEY §2.4/§2.8 — see ``feature_vector`` for the
 #        per-column reference-class map)
 # ---------------------------------------------------------------------------
 
@@ -547,7 +547,7 @@ def q58_feature_update(spark: SparkSession, sf_dir: str) -> DataFrame:
     updater type: total, maximum, minimum, replace, rate, ratio,
     count-weighted mean, and the reference's variance pool — VERBATIM,
     including its squaring of the stored variance (helpers.py:17-23 ==
-    UpdaterVariance:116-149; see functions/features.py). One equi-join on
+    UpdaterVariance:116-149; see ``update_feature_vector``). One equi-join on
     the group key; both sides arrive hash-partitioned by it from their
     groupBys."""
     e = _t(spark, sf_dir, "events")

@@ -307,12 +307,6 @@ def _drift_frac(pfx: str, i: int, n: str) -> str:
     return f"{pfx}{i} * 1.0 / GREATEST({n}, 1)"
 
 
-# ---------------------------------------------------------------------------
-# Q61 — resumable runtime under the hash gate (north rule: "resumable from
-#       checkpoint with per-partition lineage"; reference Runtime ledger
-#       db/models.py:41-75, completion update base_spark.py:567-579)
-# ---------------------------------------------------------------------------
-
 def _gate_tmp_detach(df: DataFrame, tmp: str) -> DataFrame:
     """Materialize a (small) gate result, then delete its temp workspace:
     the returned frame would otherwise lazily re-read parquet under ``tmp``

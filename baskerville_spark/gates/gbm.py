@@ -174,7 +174,7 @@ def predict_label(
 def q56_gbm_labeler(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The reference's supervised attack labeler (GBM over request-set
     features, SURVEY §2.11) rebuilt as deterministic gradient-boosted
-    stumps (ml/gbm.py: driver fit on a hard-capped hash-deterministic
+    stumps (``train_gbm``: driver fit on a hard-capped hash-deterministic
     sample with an EXACT prefix-sum stump search — no RNG anywhere —
     Arrow-batched scoring). Fixture: positives (vec_id ≡ 0 mod 40) get
     +5.0 on the first embedding component, a margin the boosted stumps

@@ -427,17 +427,15 @@ def incremental_membership(
 
 # ---------------------------------------------------------------------------
 # Q65 — transitive dedup clustering (connected components over a UNION of
-#       similarity relations; functions/graph.py — a from-scratch extension:
-#       the reference dedups per-key only, spark/helpers.py:54-75)
-# Q66 — sliding event-time windows (overlapping F.window; SURVEY §2.10's
-#       tumbling gate q23 generalized to slide < duration)
+#       similarity relations — a from-scratch extension: the reference
+#       dedups per-key only, spark/helpers.py:54-75)
 # ---------------------------------------------------------------------------
 
 def q65_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multi-relation dedup clustering: three fingerprint relations over
     the documents table — full normalized text, first-64-normalized-chars
     prefix, last-64 suffix — are unioned into one bucket-membership list;
-    star edges + min-label connected components (functions/graph.py) give
+    star edges + min-label connected components (``dedup_clusters``) give
     every document a cluster_id = min reachable doc, the canonical
     survivor of keep-one-per-cluster dedup.
 
@@ -574,7 +572,7 @@ FROM cc
 
 # ---------------------------------------------------------------------------
 # Q67 — adversarial-diameter dedup clustering: large-star/small-star CC
-#       (functions/graph.py connected_components_bigstar) on chain graphs
+#       (connected_components_bigstar) on chain graphs
 #       whose diameter defeats per-hop label propagation
 # ---------------------------------------------------------------------------
 
@@ -630,8 +628,7 @@ FROM i
 # ---------------------------------------------------------------------------
 
 def q68_incremental_chain_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The incremental-reclustering protocol (functions/graph.py
-    incremental_membership) under the hash gate. The q67 chain corpus is
+    """The incremental-reclustering protocol (incremental_membership) under the hash gate. The q67 chain corpus is
     ingested in TWO batches — even doc_ids first, odd second; each doc
     emits only ITS OWN fingerprint rows ((d, d) links-to-next and
     (d, d-1) links-to-prev within its 100-id block), so batch 2 carries

@@ -93,7 +93,7 @@ def detect_metric_anomalies(history: DataFrame) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# q128: metrics-history anomaly detection (checks/history.py) — the
+# q128: metrics-history anomaly detection (detect_metric_anomalies) — the
 # run-over-run regression detector. The reference's incident rule
 # (incident_detector.py:251-295, trailing AVG/STDDEV window per target)
 # applied to the validation engine's OWN metric series: catches a run whose

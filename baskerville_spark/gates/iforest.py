@@ -240,7 +240,7 @@ def top_anomalies(
 def q55_iforest_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The reference's core anomaly model (external Scala spark-iforest
     jar, anomaly_model.py:13,160-209) rebuilt as a pure-numpy deterministic
-    Isolation Forest (ml/iforest.py): training on a hard-capped
+    Isolation Forest (``train_iforest``): training on a hard-capped
     hash-threshold sample driver-side, scoring as one Arrow-batched
     projection pass. Fixture: two features from the embeddings table with
     every 50th vector shifted +25 — far outside the data range, so a

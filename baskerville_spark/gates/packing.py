@@ -167,7 +167,7 @@ def q77_sequence_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
     512 tokens, report per-bin doc count / token mass / id span. The global
     prefix sum is the two-phase distributed form (range partition -> P-row
     block-total agg -> literal offset map -> per-block window): no
-    single-task global Window.orderBy — see functions/packing.py."""
+    single-task global Window.orderBy — see ``pack_sequences``."""
     d = _t(spark, sf_dir, "documents").select("doc_id", "text")
     return packed_bin_summary(pack_sequences(d))
 
@@ -193,7 +193,7 @@ FROM c GROUP BY 1
 
 
 # --------------------------------------------------------------------------
-# q79/q80: document chunking + vocabulary/OOV audit
+# q79: document chunking
 # --------------------------------------------------------------------------
 
 

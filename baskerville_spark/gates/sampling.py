@@ -268,7 +268,7 @@ _MIX_WEIGHTS = {"src0": 0.4, "src1": 0.25, "src2": 0.2, "src3": 0.1, "src4": 0.0
 def q78_mixture_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pretraining domain rebalancing: downsample `documents` to the target
     source mixture (40/25/20/10/5) without upsampling — T = min_g n_g/w_g,
-    per-group deterministic md5-threshold keep (functions/sampling.py).
+    per-group deterministic md5-threshold keep (``mixture_sample``).
     ONE tiny group-count shuffle + a map-side filter; the oracle recomputes
     the group counts, the same IEEE-double rates, and the same 60-bit md5
     bucket, so the exact sampled row SET is under the hash."""

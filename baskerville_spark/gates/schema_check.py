@@ -67,8 +67,7 @@ def enforce_schema(df: DataFrame, specs: list[ColumnSpec]) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Q49/Q50 — schema-enforcement funnel and declared-pattern checks under the
-#           hash gate (checks/schema_check.py was pytest-only before)
+# Q49 — schema-enforcement funnel under the hash gate
 # ---------------------------------------------------------------------------
 
 def q49_schema_enforce(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -334,7 +334,7 @@ def cosine_topk_batched(df: DataFrame, queries: DataFrame) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Q14/Q22 — similarity search (functions/similarity.py)
+# Q14/Q22 — similarity search
 # ---------------------------------------------------------------------------
 
 def q14_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -387,8 +387,7 @@ WHERE list_sum(list_transform(generate_series(1, len(a.embedding)),
 
 
 # ---------------------------------------------------------------------------
-# Q32-Q37 — SRP-LSH ANN pairs, first/last touch, map ops, simhash Hamming
-#           join, native session windows, geo-localize pandas-UDF lookup
+# Q32 — SRP-LSH ANN pairs
 # ---------------------------------------------------------------------------
 
 def _augmented_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:

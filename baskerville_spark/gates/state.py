@@ -125,7 +125,7 @@ class StateStore:
 
 def q29_state_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental state upsert (reference request-set cache full_outer merge,
-    request_set_cache.py:370-400) via runtime.state.upsert_state."""
+    request_set_cache.py:370-400) via upsert_state."""
     e = _t(spark, sf_dir, "events")
     ts_epoch = F.unix_timestamp(F.col("ts").cast("timestamp"))
     half = F.lit("2024-01-15 00:00:00")

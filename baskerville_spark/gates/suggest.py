@@ -181,7 +181,7 @@ def functional_dependency(
 
 
 # --------------------------------------------------------------------------
-# q129: constraint suggestion (checks/suggest.py) — the Deequ-style
+# q129: constraint suggestion (suggest_constraints) — the Deequ-style
 # profile->suite loop the reference cannot do (its rules are hard-coded per
 # feature class, src/baskerville/features/feature_*.py). Profiles a derived
 # orders frame (planted 2% NULL tag column with 30 distinct values, so the
@@ -263,7 +263,7 @@ p AS (
 
 
 # --------------------------------------------------------------------------
-# q130: functional-dependency checks (checks/suggest.py). Uniqueness proves
+# q130: functional-dependency checks (functional_dependency). Uniqueness proves
 # a KEY; an FD proves AGREEMENT — "transcript rows sharing a clip_id must
 # agree on codec" is the audio-table shape. Three FDs: a holding one
 # (o_orderkey -> o_orderstatus, key->attribute), a violated single-column

@@ -289,7 +289,7 @@ def oov_rate(df: DataFrame, vocab: DataFrame) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Q11-Q13 — text analysis (functions/text.py)
+# Q11-Q13 — text analysis
 # ---------------------------------------------------------------------------
 
 def q11_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -407,7 +407,7 @@ GROUP BY token ORDER BY n DESC, token ASC LIMIT 20
 
 # ---------------------------------------------------------------------------
 # Q71 — Gopher-style repetition quality metrics
-#       (functions/text.repetition_metrics)
+#       (repetition_metrics)
 # ---------------------------------------------------------------------------
 
 def q71_repetition_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -482,7 +482,7 @@ FROM ratios r JOIN topg t ON r.doc_id = t.doc_id
 
 
 # ---------------------------------------------------------------------------
-# Q72 — per-document character entropy (functions/text.char_entropy)
+# Q72 — per-document character entropy (char_entropy)
 # ---------------------------------------------------------------------------
 
 def q72_char_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -527,7 +527,7 @@ FROM ids LEFT JOIN ent USING (id)
 
 
 # ---------------------------------------------------------------------------
-# Q73 — PII detection + scrubbing (functions/text.pii_scrub)
+# Q73 — PII detection + scrubbing (pii_scrub)
 # ---------------------------------------------------------------------------
 
 _PII_TAIL = (

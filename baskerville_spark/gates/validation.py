@@ -402,6 +402,12 @@ FROM d WHERE lang IS NOT NULL AND NOT regexp_matches(lang, '^[a-z]{2}$')
 """
 
 
+# ---------------------------------------------------------------------------
+# Q61 — resumable runtime under the hash gate (north rule: "resumable from
+#       checkpoint with per-partition lineage"; reference Runtime ledger
+#       db/models.py:41-75, completion update base_spark.py:567-579)
+# ---------------------------------------------------------------------------
+
 def q61_resume_verdicts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """q21's closed-form verdict grid, produced across TWO interrupted runs
     of the resumable runtime plus an idempotence probe.
@@ -1058,7 +1064,8 @@ FROM e GROUP BY event_type
 
 
 # --------------------------------------------------------------------------
-# q132/q133: classical two-sample tests — chi-squared homogeneity of a
+# q132 (q133 lives in gates/drift.py): classical two-sample tests —
+# chi-squared homogeneity of a
 # group's categorical mix vs the REST of the table, and Mann-Whitney U
 # (tie-corrected rank-sum) of a group's numeric values vs the rest. The
 # calibrated complements to the distance family (PSI q44, binned KS q97):

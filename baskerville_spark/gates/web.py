@@ -345,7 +345,7 @@ LIMIT 10
 
 
 # ---------------------------------------------------------------------------
-# Q24-Q29 — sessionization, JSON, rollup, as-of join, sampling, state merge
+# Q24-Q27 — sessionization, JSON, rollup, as-of join
 # ---------------------------------------------------------------------------
 
 def q24_sessionization(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -644,7 +644,7 @@ FROM s GROUP BY user_id, sid
 
 
 # ---------------------------------------------------------------------------
-# Q43-Q45 — single-shuffle first/last, PSI/KS drift gate, Kafka-shaped stream
+# Q43 — single-shuffle first/last
 # ---------------------------------------------------------------------------
 
 def q43_first_last_agg(spark: SparkSession, sf_dir: str) -> DataFrame:

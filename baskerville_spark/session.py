@@ -32,9 +32,8 @@ from pyspark.sql import SparkSession
 # matter: at 128 rows a batch is ~4 MB for sub-second clips and ~37 MB for
 # 3 s clips — x32 concurrent tasks stays ~1 GB. The old 512 default put
 # ~150 MB per batch in flight per core with 3 s clips and drove the local
-# JVM into GC thrash/OOM at local[32]. Tune via env for unusual payloads
-# (30 s @ 48 kHz ≈ 1 MB/row → set 16-32).
-ARROW_BATCH_ROWS = int(os.environ.get("BASK_ARROW_BATCH_ROWS", "128"))
+# JVM into GC thrash/OOM at local[32].
+ARROW_BATCH_ROWS = 128
 
 
 def _default_driver_mem(meminfo: str = "/proc/meminfo") -> str:
