@@ -5,7 +5,10 @@ Spark-first (baskerville_spark package), with a DuckDB oracle in
 ``oracle_sql()`` computing the identical result (same column names, floats
 rounded identically on both sides). Every gate has an oracle: the ``_GATES``
 table at the end of this module holds one (callable, oracle) row per gate,
-in driver order.
+in driver order. Each gate's body and oracle string live in the
+``baskerville_spark/gates/`` module of the operator it exercises; the gates
+over the engine's own checks and runner in ``gates/validation.py``, and the
+helpers gates of several modules share in ``gates/fixtures.py``.
 
 Synthetic gate fixtures are a per-index ``plant(i)`` run through
 ``generator.rows_from_range``; gates measure decoded payloads only through

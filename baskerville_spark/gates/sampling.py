@@ -63,8 +63,6 @@ def mixture_sample(df, target_weights: dict[str, float]):
     partitionings. Groups absent from ``target_weights`` are dropped
     (their target share is zero).
     """
-    from pyspark.sql import functions as F
-
     counts = {
         r[0]: r[1] for r in df.groupBy("source").count().collect()
     }

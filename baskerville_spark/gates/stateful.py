@@ -102,8 +102,6 @@ def incremental_group_stats(stream: DataFrame, key_col: str) -> DataFrame:
     semantics (subset_count ≙ n_batches, base_spark.py:849-852). State has
     no timeout: a key's stats live as long as the query.
     """
-    from pyspark.sql import functions as F
-
     src = stream.select(
         F.col(key_col).cast("string").alias("key"),
         F.col("value").cast("double").alias("value"),

@@ -106,8 +106,6 @@ def repetition_metrics(df):
     (doc, gram). Single-token docs emit 0.0 for the 2-gram metrics
     (nothing to repeat), matching the SQL oracle's coalesce.
     """
-    from pyspark.sql import functions as F
-
     toks = F.split(F.lower(F.col("text")), r"\s+")
     k = F.size(toks) - 1
     grams = F.when(
@@ -161,8 +159,6 @@ def char_entropy(df):
     bounded by |alphabet| per doc, so the shuffle is tiny regardless of
     document length. Empty/NULL texts emit 0.0.
     """
-    from pyspark.sql import functions as F
-
     chars = df.select(
         F.col("doc_id").alias("id"),
         F.explode_outer(F.split(F.coalesce(F.col("text"), F.lit("")), "")).alias(
@@ -217,8 +213,6 @@ def pii_scrub(df):
     Replacement order is most-specific-first so an SSN is not half-eaten
     by the phone pattern.
     """
-    from pyspark.sql import functions as F
-
     text = F.coalesce(F.col("text"), F.lit(""))
     counts = [
         F.regexp_count(text, F.lit(rx)).alias(f"{kind}_count")
