@@ -1,6 +1,7 @@
 """Fixtures and helpers the gates of several ``gates/`` modules share:
 testdata scans, the shared generated clip fixture, the streaming
-shuffle override and memory-sink drain, and the verdict grid."""
+shuffle override and memory-sink drain, the verdict grid and its
+closed-form oracle (q21/q61/q95), and the drift fixture (q44/q127)."""
 
 from __future__ import annotations
 
@@ -235,17 +236,9 @@ FROM grid
 
 #: Drift-gate literals shared by the Spark plan and the generated oracle SQL.
 DRIFT_VALUE_EDGES = [0.0, 5.0, 25.0, 100.0, 500.0]
-
-
 DRIFT_VALUE_BASE = [0.3, 0.3, 0.2, 0.2]
-
-
 DRIFT_TYPE_CATS = ["click", "view", "purchase", "signup", "error"]
-
-
 DRIFT_TYPE_BASE = [0.2, 0.2, 0.2, 0.2, 0.2, 0.0]  # + trailing OTHER
-
-
 #: (column, bucket-count prefix, non-NULL count, baseline fractions)
 _DRIFT_COLS = (
     ("value", "v", "n_v", DRIFT_VALUE_BASE),

@@ -214,7 +214,6 @@ _Q129_COLS = [
     ("o_tag", False, True),
 ]
 
-
 _Q129_PROFILE = ",\n".join(
     f"""    COUNT({c}) AS nn_{c}, COUNT(DISTINCT {c}) AS nd_{c}"""
     + (f""",
@@ -222,7 +221,6 @@ _Q129_PROFILE = ",\n".join(
     CAST(MAX({c}) AS DOUBLE) AS hi_{c}""" if num else "")
     for c, num, _ in _Q129_COLS
 )
-
 
 _Q129_BRANCHES = "\nUNION ALL\n".join(
     b for c, num, s in _Q129_COLS for b in filter(None, [
@@ -246,7 +244,6 @@ FROM p WHERE nn_{c} > 0""" if num else None),
 FROM p WHERE nd_{c} BETWEEN 1 AND 20""" if s else None),
     ])
 )
-
 
 Q129_SQL = f"""
 WITH src AS (

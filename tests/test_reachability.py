@@ -527,9 +527,8 @@ def test_every_defaulted_parameter_is_set_by_a_production_call():
 
 def _gate_callables(modules):
     """``(module, name)`` of the callables in ``__spark_entry__._GATES``'s
-    rows: a bare name is ``__spark_entry__``'s own, or resolves through its
-    ``from M import name``; ``mod.name`` resolves ``mod`` through its
-    imports."""
+    rows: a bare name is ``__spark_entry__``'s own; ``mod.name`` resolves
+    ``mod`` through its imports."""
     m = modules.get("__spark_entry__")
     for stmt in m.tree.body if m else ():
         if isinstance(stmt, ast.Assign) and any(
@@ -537,13 +536,11 @@ def _gate_callables(modules):
         ):
             out = set()
             for row in stmt.value.elts:
-                chain = _dotted(row.elts[0])
-                targets = getattr(m, "imports", {}).get(chain[0], ())
-                if len(chain) == 1:
-                    defs = [(t[1], t[2]) for t in targets if t[0] == "def"]
-                    out.update(defs or [("__spark_entry__", chain[0])])
+                mod, *attr = _dotted(row.elts[0])
+                if not attr:
+                    out.add(("__spark_entry__", mod))
                 else:
-                    out.update((t[1], chain[1]) for t in targets if t[0] == "mod")
+                    out.update((t[1], attr[0]) for t in m.imports.get(mod, ()) if t[0] == "mod")
             return out
     return set()
 
