@@ -38,7 +38,6 @@ from pyspark.sql import types as T
 from pyspark.sql.pandas.types import to_arrow_schema
 
 from baskerville_spark import audio
-from baskerville_spark import audio as au
 from baskerville_spark.gates.audio_quality import _per_clip
 from baskerville_spark.gates.fixtures import _shared_clip_fixture
 from baskerville_spark.generator import (
@@ -443,7 +442,7 @@ def q113_mulaw_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         return [planted_clip("mu", i, np.full(40, xv, dtype="<i2"))]
 
     mu = reencode(rows_from_range(spark, 150, plant, PLANT_SCHEMA), "mulaw")
-    return au.decode_pass(
+    return audio.decode_pass(
         mu.select("clip_id", "bytes", "codec"),
         T.StructType.fromDDL(
             "clip_id string, mu_val long, n_samples long, uniform boolean"

@@ -43,7 +43,6 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from baskerville_spark import audio
-from baskerville_spark import audio as au
 from baskerville_spark.generator import PLANT_SCHEMA, planted_clip, rows_from_range
 
 FULL_SCALE = 32768.0
@@ -852,7 +851,7 @@ def q88_trim_silence(spark: SparkSession, sf_dir: str) -> DataFrame:
     EXACTLY, a pure integer the oracle rebuilds from the same mods. Runs
     the real decode → trim → encode → decode pipeline."""
     trimmed = audio_trim_silence(_q88_q89_clips(spark))
-    return au.decode_pass(
+    return audio.decode_pass(
         trimmed.select("clip_id", "bytes", "codec"),
         T.StructType.fromDDL("clip_id string, trimmed_samples long"),
         lambda pcm: (len(pcm),),
@@ -902,7 +901,7 @@ FROM m
 
 def _len_peak(df: DataFrame) -> DataFrame:
     """(clip_id, n_samples, peak |sample|) of every clip in ``df``."""
-    return au.decode_pass(
+    return audio.decode_pass(
         df.select("clip_id", "bytes", "codec"),
         T.StructType.fromDDL("clip_id string, n_samples long, peak long"),
         lambda pcm: (len(pcm), int(abs(pcm.astype("int32")).max())),
