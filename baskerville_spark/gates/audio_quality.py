@@ -37,6 +37,7 @@ from __future__ import annotations
 from typing import Iterator
 
 import numpy as np
+import pandas as pd
 import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -473,8 +474,6 @@ def audio_concat_segments(segs: DataFrame) -> DataFrame:
     bytes once (no amplification), and clips segmented by the same job are
     usually still partition-local (same input split), so AQE sees a
     near-no-op exchange."""
-    import pandas as pd
-
     meta_cols = [
         c for c in segs.columns if c not in ("bytes", "seg_idx", "n_samples")
     ]

@@ -30,6 +30,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from baskerville_spark.runtime.checkpoint import _Ckpt
 
@@ -137,8 +138,6 @@ def apply_bpe(docs: DataFrame, merges: DataFrame) -> DataFrame:
     ]
     rank_of = {pair: i for i, pair in enumerate(ranked)}
     docs_schema = docs.schema
-
-    from pyspark.sql import types as T
 
     out_schema = T.StructType(
         docs_schema.fields

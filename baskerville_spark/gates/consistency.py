@@ -27,7 +27,7 @@ shuffle keyed on part_id, identical in shape to stats_verdicts.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from baskerville_spark.gates.fixtures import _shared_clip_fixture, _t
@@ -177,8 +177,6 @@ def out_of_order_stats(
     still counts in n_events. Returns (key, n_events, n_late, late_frac,
     flagged); a key is flagged when more than 1% of its events are late.
     """
-    from pyspark.sql import Window
-
     w = (
         Window.partitionBy(key_col)
         .orderBy(seq_col)

@@ -8,7 +8,7 @@ so each fold the SQL oracles mirror exists exactly once.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Row, SparkSession
+from pyspark.sql import Column, DataFrame, Row, SparkSession, Window
 from pyspark.sql import functions as F
 
 from baskerville_spark.checks.drift import (
@@ -388,8 +388,6 @@ def wasserstein_binned(
     clamped into [lo, hi) bins, NULLs dropped. Returns per group:
     (group_cols..., n_a, n_b, w1, drift) with w1 rounded to 6 dp.
     """
-    from pyspark.sql import Window
-
     width = (hi - lo) / n_bins
     v = F.col(value_col)
     bin_c = F.least(

@@ -43,6 +43,8 @@ Scale design:
 
 from __future__ import annotations
 
+from concurrent.futures import ThreadPoolExecutor
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -286,8 +288,6 @@ def connected_components_bigstar(vertices: DataFrame, edges: DataFrame) -> DataF
     )
     # the two probes are independent tiny jobs over the final edge list —
     # run them concurrently (guide §2.6) instead of back-to-back
-    from concurrent.futures import ThreadPoolExecutor
-
     with ThreadPoolExecutor(2) as pool:
         f_bad = pool.submit(stars.where(F.col("nroots") > 1).limit(1).count)
         f_deep = pool.submit(

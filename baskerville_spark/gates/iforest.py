@@ -38,6 +38,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from baskerville_spark.gates.fixtures import _t
+from baskerville_spark.gates.sampling import hash_threshold_keep
 
 
 def _c(n: float) -> float:
@@ -149,8 +150,6 @@ def training_sample(
     at ``max_train_rows`` driver-side rows (same bound contract as
     gates.similarity.ivf_training_sample — one column-pruned count to
     size the threshold, ``limit`` as the backstop)."""
-    from baskerville_spark.gates.sampling import hash_threshold_keep
-
     base = df.select(id_col, *feature_cols).na.drop(subset=feature_cols)
     n = base.count()
     frac = min(1.0, 0.9 * max_train_rows / max(n, 1))

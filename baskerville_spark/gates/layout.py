@@ -20,7 +20,7 @@ the "DB" is a file format.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from baskerville_spark.gates.fixtures import _t
@@ -81,8 +81,6 @@ def plan_compaction(file_stats: DataFrame, target_bytes: int) -> DataFrame:
     target keep ``compaction_group`` NULL — already big enough, leave
     them alone. Contiguity in file order preserves whatever clustering
     (z-order, time) the files already have."""
-    from pyspark.sql import Window
-
     is_small = F.col("bytes") < F.lit(target_bytes)
     w = (
         Window.partitionBy("partition")

@@ -20,7 +20,7 @@ equivalent (q28, q38, q55 all ride it).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from baskerville_spark.gates.fixtures import _t
@@ -128,8 +128,6 @@ def select_within_token_budget(
     is a within-block window cumsum — no single-task global window, no
     driver-side data beyond P (parallelism) bound rows.
     """
-    from pyspark.sql import Window
-
     base = df.withColumn("__pri", F.col(priority_col)).withColumn(
         "__tok", F.col(tokens_col).cast("long")
     )

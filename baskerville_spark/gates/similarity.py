@@ -16,10 +16,12 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import ArrayType, IntegerType, LongType
 
 from baskerville_spark.gates.fixtures import _t
+from baskerville_spark.gates.sampling import hash_threshold_keep
 
 TOP_K = 10  # rows ``cosine_topk`` and ``ivf_topk`` return
 BATCH_TOP_K = 5  # rows per query ``cosine_topk_batched`` returns
@@ -125,8 +127,6 @@ def hyperplane_lsh_pairs(df: DataFrame) -> DataFrame:
     two ids — vectors and norms are fetched by id joins only for the
     deduplicated candidate pairs. Wide rows never enter the self-join or
     the distinct."""
-    from pyspark.sql.types import ArrayType, LongType
-
     dim, n_planes, n_tables = LSH_DIM, LSH_N_PLANES, LSH_N_TABLES  # the UDF ships these values
     rng = np.random.default_rng(42)
     # one (n_tables*n_planes, dim) matrix; same draw order as per-table calls
@@ -182,8 +182,6 @@ def ivf_training_sample(df: DataFrame, sample_mod: int, max_train_rows: int) -> 
 
     Costs one column-pruned count() of the corpus to size the threshold.
     """
-    from baskerville_spark.gates.sampling import hash_threshold_keep
-
     base = df.where(F.col("embedding").isNotNull())
     n = base.count()
     frac = min(1.0 / sample_mod, 0.9 * max_train_rows / max(n, 1))
@@ -237,8 +235,6 @@ def train_ivf_centroids(df: DataFrame) -> np.ndarray:
 def ivf_assign(df: DataFrame, centroids: np.ndarray) -> DataFrame:
     """(id, v, cluster): nearest-centroid assignment via ONE Arrow-batched
     matmul per batch (argmin ||x−c||² = argmax x·c − ½|c|²)."""
-    from pyspark.sql.types import IntegerType
-
     cent = np.asarray(centroids, dtype=np.float64)
     half_norms = 0.5 * (cent * cent).sum(1)
 
@@ -310,8 +306,6 @@ def cosine_topk_batched(df: DataFrame, queries: DataFrame) -> DataFrame:
     pack_sequences) or route through the IVF index (ivf_topk) instead of
     exact scoring.
     """
-    from pyspark.sql import Window
-
     emb = F.transform(F.col("embedding"), lambda x: x.cast("double"))
     base = _with_norms(df)
     qs = queries.select(

@@ -415,8 +415,8 @@ def q61_resume_verdicts(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_resume.py is the unit version of this protocol; the gate puts
     it under the DuckDB hash oracle:
       1. partitions {2,3} are planted as done in the manifest, so run A's
-         pending set is {0,1} — partition pruning keeps finished parts out
-         of the scan (BASELINE.md shows the PartitionFilters fragment).
+         pending set is {0,1} — only the pending ``part_id=N`` directories
+         are read, so finished parts never enter the scan.
       2. the planted marks are removed — the "crash": those two partitions
          never actually committed.
       3. run B resumes and must validate exactly {2,3}.

@@ -88,18 +88,16 @@ def cmd_validate(args) -> int:
     elapsed = time.time() - t0
     n_rows = 0
     if processed:
-        from pyspark.sql import functions as F
+        import pyarrow.compute as pc
 
         from baskerville_spark.runtime.manifest import read_manifest
 
         # the per-partition row counts this run committed: no second scan
         # of the clip table
-        n_rows = (
-            read_manifest(spark, args.manifest)
-            .where(F.col("part_id").isin(processed))
-            .agg(F.sum("n_rows"))
-            .first()[0]
-        )
+        ledger = read_manifest(args.manifest)
+        n_rows = pc.sum(
+            ledger.filter(pc.field("part_id").isin(processed))["n_rows"]
+        ).as_py()
     print(
         json.dumps(
             {

@@ -40,6 +40,7 @@ class _Ckpt:
     def __init__(self) -> None:
         self._prev_file: str | None = None
         self._pending: tuple[DataFrame, DataFrame] | None = None
+        self._last: DataFrame | None = None
         self._sc = None
 
     def __call__(self, df: DataFrame) -> DataFrame:
@@ -63,12 +64,14 @@ class _Ckpt:
         must invoke ``committed`` after that action for unpersist +
         stale-file cleanup."""
         if df.sparkSession.sparkContext.getCheckpointDir() is None:
-            return df.localCheckpoint(eager=False)
-        from pyspark import StorageLevel
+            out = df.localCheckpoint(eager=False)
+        else:
+            from pyspark import StorageLevel
 
-        df.persist(StorageLevel.MEMORY_AND_DISK)
-        out = df.checkpoint(eager=False)
-        self._pending = (df, out)
+            df.persist(StorageLevel.MEMORY_AND_DISK)
+            out = df.checkpoint(eager=False)
+            self._pending = (df, out)
+        self._last = out
         return out
 
     def committed(self, out: DataFrame) -> None:
@@ -85,10 +88,18 @@ class _Ckpt:
         self._delete(stale)
 
     def release(self) -> None:
-        """Delete this instance's FINAL checkpoint file too — for one-off
-        materializations (the label loop's symmetrized edges,
+        """Give up everything this instance still holds: the last
+        checkpoint's executor blocks, a pre-checkpoint frame whose action
+        never committed (it raised), and the FINAL checkpoint file — for
+        one-off materializations (the label loop's symmetrized edges,
         run_validation's frames) whose data nothing references once
-        their consumers have run."""
+        their consumers have run or their fill has failed."""
+        if self._pending is not None:
+            self._pending[0].unpersist()
+            self._pending = None
+        if self._last is not None:
+            self._last._jdf.queryExecution().logical().rdd().unpersist(False)
+            self._last = None
         stale, self._prev_file = self._prev_file, None
         self._delete(stale)
 

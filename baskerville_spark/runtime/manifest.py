@@ -12,7 +12,10 @@ snapshot append — the interface is the same.
 
 Resume contract: pending = all_partitions − done (anti-join semantics); a
 killed job re-runs only unfinished partitions and re-commits are idempotent
-(same part_id overwrites by filename).
+(same part_id overwrites by filename). The ledger is read back on the
+driver in one pyarrow read of the directory (``read_manifest``), with no
+Spark job; ``done_partitions`` and the CLI's row count both filter that
+table.
 """
 
 from __future__ import annotations
@@ -24,11 +27,11 @@ from datetime import datetime, timezone
 from urllib.parse import urlparse
 
 import pyarrow as pa
+import pyarrow.compute as pc
 import pyarrow.parquet as pq
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import SparkSession
 
 from baskerville_spark import __version__
-from baskerville_spark.schema import MANIFEST_SCHEMA
 
 _ARROW_SCHEMA = pa.schema(
     [
@@ -54,50 +57,24 @@ def _local_dir(path: str) -> str:
     return path
 
 
-def read_manifest(spark: SparkSession, path: str) -> DataFrame | None:
+def read_manifest(path: str) -> pa.Table:
+    """Every manifest row, in ONE pyarrow read of the local directory (no
+    Spark job). Hidden and ``_``-prefixed files (an uncommitted ``._tmp_*``
+    write) are skipped; a file without a manifest column reads it as NULL,
+    so a foreign file marks nothing done; a corrupt file raises
+    ``ArrowInvalid`` naming it, never a silent empty ledger that would force
+    a full recompute. A missing directory is an empty ledger. A remote URI
+    raises, as commits do."""
     local = _local_dir(path)
-    if not os.path.isdir(local) or not any(
-        f.endswith(".parquet") for f in os.listdir(local)
-    ):
-        return None
-    return spark.read.schema(MANIFEST_SCHEMA).parquet(path)
+    if not os.path.isdir(local):
+        return _ARROW_SCHEMA.empty_table()
+    return pq.read_table(local, schema=_ARROW_SCHEMA)
 
 
 def done_partitions(spark: SparkSession, path: str) -> set[int]:
-    """Done-mark part_ids. ``commit_partition`` writes one tiny LOCAL
-    parquet file per partition with pyarrow; read them back the same way —
-    a Spark job (scan + collect) for O(partitions) driver-local files was
-    pure scheduling overhead (~1 s per resumable run at local[32]). The
-    Spark read is the fallback for a local file pyarrow cannot read as a
-    manifest row (foreign schema, corrupt file) — never a silent empty set
-    that forces a full recompute. A remote URI raises, as commits do."""
-    local = _local_dir(path)
-    if not os.path.isdir(local):
-        return set()
-    try:
-        out: set[int] = set()
-        for f in os.listdir(local):
-            if not f.endswith(".parquet") or f.startswith("._tmp"):
-                continue
-            t = pq.read_table(
-                os.path.join(local, f), columns=["part_id", "status"]
-            )
-            for pid, st in zip(
-                t.column("part_id").to_pylist(),
-                t.column("status").to_pylist(),
-            ):
-                if st == "done":
-                    out.add(pid)
-        return out
-    except (OSError, KeyError, pa.ArrowException):
-        pass
-    m = read_manifest(spark, path)
-    if m is None:
-        return set()
-    return {
-        r["part_id"]
-        for r in m.where("status = 'done'").select("part_id").collect()
-    }
+    """Done-mark part_ids of the manifest at ``path`` (``read_manifest``)."""
+    t = read_manifest(path)
+    return set(t.filter(pc.field("status") == "done")["part_id"].to_pylist())
 
 
 def commit_partition(

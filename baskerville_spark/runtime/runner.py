@@ -34,9 +34,12 @@ Scale design (100 TB):
 - Exactly one shuffle per aggregate check, keyed on part_id (or (part_id,
   clip_id) for uniqueness), with map-side partial aggregation. Verdict and
   violation outputs are tiny relative to input; their unions are cheap.
-- Resume: partition pruning via a ``part_id IN (pending)`` predicate — with
-  parquet `partitionBy(part_id)` layout (or Iceberg partition specs) the
-  done partitions are never read at all.
+- Resume: one driver-side FileSystem listing of the
+  ``partitionBy("part_id")`` table says which partitions exist and one
+  pyarrow read of the manifest says which are done; only the pending
+  ``part_id=N`` directories are handed to the reader, so the done
+  partitions are never listed by Spark or read, and a resume with nothing
+  pending launches no Spark job.
 - Sinks are rebalanced on part_id before their writes, so AQE sizes the
   write tasks by output volume instead of inheriting the inputs' partition
   counts. The manifest's per-partition metrics come from the verdict plan
@@ -51,6 +54,7 @@ Scale design (100 TB):
 from __future__ import annotations
 
 import json
+import re
 import sys
 from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass
@@ -126,8 +130,6 @@ class ValidationResult:
         is exhausted. Every output reads the checkpoints, so none can be
         recomputed afterwards."""
         self.slim.unpersist()
-        for df in (self.stats, self.violations):
-            df._jdf.queryExecution().logical().rdd().unpersist(False)
         for ckpt in self.ckpts:
             ckpt.release()
 
@@ -190,85 +192,99 @@ def run_validation(
     """
     # slim fills first, so the stats and the checks read its cache
     slim = clips.select(*[c for c in META_COLS if c in clips.columns]).persist()
-    slim.count()
-    st = stats.column_stats(
-        slim, numeric_cols=list(cfg.numeric_cols),
-        other_cols=["clip_id", "codec", "transcript"],
-    )
-
-    # each violation frame with the check names it owns, in union order
-    frames = [uniqueness.uniqueness_violations(slim, n_salt=cfg.n_salt)]
-    names = ["uniqueness"]
-    if transcript_ref is not None:
-        frames.append(referential.ref_integrity_violations(slim, transcript_ref))
-        names.append("ref_integrity")
-    frames.append(pattern_violations(slim, CLIP_SPECS))
-    names += [f"pattern:{c}" for c in CLIP_SPECS]
-    if cfg.check_audio:
-        frames.append(inv_mod.invariant_violations(
-            inv_mod.audio_invariant(clips, transcript_ref)))
-        names += ["snr", "decode_error", "transcript_eq"]
-
-    # both checkpoints filled CONCURRENTLY, so each job back-fills the
-    # other's task tail (guide §2.6); every consumer below reads them
+    # a failure before the result is returned (a fill that raises, a suite
+    # that fails to resolve) releases slim and the checkpoints here:
+    # run_resumable's cleanup only sees a result that was returned
     ckpts = (_Ckpt(), _Ckpt())
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        st, violations = pool.map(
-            lambda ckpt, df: ckpt(df),
-            ckpts, (st, reduce(DataFrame.unionByName, frames)),
-        )
-
-    verdicts = [stats.stats_verdicts(st, cfg.null_rate_max, cfg.range_bounds)]
-    if baseline_rows:
-        verdicts.append(drift_mod.drift_verdicts(slim, baseline_rows))
-    if cfg.extra_suite:
-        verdicts.append(
-            suite_mod.run_suite(slim, list(cfg.extra_suite), group_by=["part_id"]).selectExpr(
-                "CAST(part_id AS INT) AS part_id",
-                "concat('suite:', check_name) AS check_name",
-                "passed", "metric_value", "threshold", "n_rows", "n_violations",
-            )
-        )
-    part_rows = st.where("column_name = 'clip_id'").selectExpr(
-        "part_id", "`count` + null_count AS n_rows"
-    )  # per-partition row counts from stats: no extra scan of the fact
-    verdicts.append(_violation_verdicts(violations, part_rows, names))
-    states = None
-    if cfg.state_hist_edges is not None:
-        states = stats_state_mod.stats_state(
-            slim, ["part_id"], list(cfg.numeric_cols),
-            [c for c in STATE_DISTINCT_COLS if c in slim.columns],
-            hist_cols=cfg.state_hist_edges,
-        )
-    return ValidationResult(
-        verdicts=reduce(DataFrame.unionByName, verdicts), violations=violations,
-        stats=st, states=states, slim=slim, ckpts=ckpts,
-    )
-
-
-def _partition_values(clips: DataFrame) -> set[int] | None:
-    """part_id values of a hive-partitioned (``part_id=N`` directory) clip
-    table, read from the scan's file list — DRIVER-side metadata the reader
-    has already listed, so resume discovery costs no Spark job. The value
-    comes from each file's OWN directory (the last path segment): an
-    ancestor directory that happens to be named ``part_id=N`` must not
-    collapse every file onto N. None when any file is outside that layout
-    (caller falls back to a distinct scan: partition values then genuinely
-    live in the data)."""
-    import re
-
     try:
-        files = clips.inputFiles()
-    except Exception:
-        return None
-    if not files:
-        return None
+        slim.count()
+        st = stats.column_stats(
+            slim, numeric_cols=list(cfg.numeric_cols),
+            other_cols=["clip_id", "codec", "transcript"],
+        )
+
+        # each violation frame with the check names it owns, in union order
+        frames = [uniqueness.uniqueness_violations(slim, n_salt=cfg.n_salt)]
+        names = ["uniqueness"]
+        if transcript_ref is not None:
+            frames.append(referential.ref_integrity_violations(slim, transcript_ref))
+            names.append("ref_integrity")
+        frames.append(pattern_violations(slim, CLIP_SPECS))
+        names += [f"pattern:{c}" for c in CLIP_SPECS]
+        if cfg.check_audio:
+            frames.append(inv_mod.invariant_violations(
+                inv_mod.audio_invariant(clips, transcript_ref)))
+            names += ["snr", "decode_error", "transcript_eq"]
+
+        # both checkpoints filled CONCURRENTLY, so each job back-fills the
+        # other's task tail (guide §2.6); every consumer below reads them
+        with ThreadPoolExecutor(max_workers=2) as pool:
+            st, violations = pool.map(
+                lambda ckpt, df: ckpt(df),
+                ckpts, (st, reduce(DataFrame.unionByName, frames)),
+            )
+
+        verdicts = [stats.stats_verdicts(st, cfg.null_rate_max, cfg.range_bounds)]
+        if baseline_rows:
+            verdicts.append(drift_mod.drift_verdicts(slim, baseline_rows))
+        if cfg.extra_suite:
+            verdicts.append(
+                suite_mod.run_suite(slim, list(cfg.extra_suite), group_by=["part_id"]).selectExpr(
+                    "CAST(part_id AS INT) AS part_id",
+                    "concat('suite:', check_name) AS check_name",
+                    "passed", "metric_value", "threshold", "n_rows", "n_violations",
+                )
+            )
+        part_rows = st.where("column_name = 'clip_id'").selectExpr(
+            "part_id", "`count` + null_count AS n_rows"
+        )  # per-partition row counts from stats: no extra scan of the fact
+        verdicts.append(_violation_verdicts(violations, part_rows, names))
+        states = None
+        if cfg.state_hist_edges is not None:
+            states = stats_state_mod.stats_state(
+                slim, ["part_id"], list(cfg.numeric_cols),
+                [c for c in STATE_DISTINCT_COLS if c in slim.columns],
+                hist_cols=cfg.state_hist_edges,
+            )
+        return ValidationResult(
+            verdicts=reduce(DataFrame.unionByName, verdicts), violations=violations,
+            stats=st, states=states, slim=slim, ckpts=ckpts,
+        )
+    except BaseException:
+        slim.unpersist()
+        for ckpt in ckpts:
+            ckpt.release()
+        raise
+
+
+def _part_ids(spark: SparkSession, root: str) -> set[int]:
+    """The N of every ``part_id=N`` child directory of ``root`` (none when
+    ``root`` does not exist), from ONE driver-side Hadoop FileSystem
+    listing rendered to one string on the JVM side: no Spark job, one py4j
+    round trip for the whole listing, any file/hdfs/s3a scheme. Only each
+    child's ``part_id=`` tail is parsed, so an ancestor directory named
+    ``part_id=9`` or holding a comma changes nothing. A non-integer value
+    (a NULL part_id's ``__HIVE_DEFAULT_PARTITION__``) raises: the manifest
+    ledger keys on an int part_id."""
+    jvm = spark.sparkContext._jvm
+    path = jvm.org.apache.hadoop.fs.Path(root)
+    fs = path.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
+    if not fs.exists(path):
+        return set()
+    listing = jvm.org.apache.commons.lang3.ArrayUtils.toString(
+        jvm.org.apache.hadoop.fs.FileUtil.stat2Paths(fs.listStatus(path))
+    )  # "{<root>/part_id=0,<root>/_SUCCESS,...}"
     out: set[int] = set()
-    for f in files:
-        m = re.search(r"[/\\]part_id=(-?\d+)[/\\][^/\\]+$", f)
-        if m is None:
-            return None
-        out.add(int(m.group(1)))
+    for v in re.findall(r"/part_id=([^/,}]*)(?=[,}])", listing):
+        try:
+            out.add(int(v))
+        except ValueError:
+            raise ValueError(
+                f"{root!r} has a part_id={v} directory: rows with a NULL "
+                "part_id (the __HIVE_DEFAULT_PARTITION__ partition) or a "
+                "non-integer part_id; assign every clip an integer part_id "
+                "before a resumable run"
+            ) from None
     return out
 
 
@@ -276,31 +292,14 @@ def _delete_pending_sink_dirs(
     spark: SparkSession, out_dir: str, sink_names: tuple, pending: list
 ) -> None:
     """Remove ``{out_dir}/{sink}/part_id={p}`` for every pending partition
-    via the Hadoop FileSystem API (portable across file/hdfs/s3a schemes).
-
-    Every JVM call is a py4j round trip, so the cost is bounded by
-    what exists, not by the pending count: an absent sink directory (a
-    fresh run) costs one call, and a present one is listed once, its child
-    paths rendered to one string on the JVM side, and only the pending
-    children that exist are deleted."""
-    import re
-
-    jvm = spark.sparkContext._jvm
-    Path = jvm.org.apache.hadoop.fs.Path
-    hconf = spark.sparkContext._jsc.hadoopConfiguration()
-    fs = Path(out_dir).getFileSystem(hconf)  # one lookup: every sink shares it
-    wanted = {int(p) for p in pending}
+    via the Hadoop FileSystem API. Every JVM call is a py4j round trip, so
+    the cost is bounded by what exists, not by the pending count: each sink
+    is listed once (``_part_ids``) and only the pending children that exist
+    are deleted."""
+    Path = spark.sparkContext._jvm.org.apache.hadoop.fs.Path
+    fs = Path(out_dir).getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
     for sink in sink_names:
-        sink_dir = Path(f"{out_dir}/{sink}")
-        if not fs.exists(sink_dir):
-            continue
-        listing = jvm.org.apache.commons.lang3.ArrayUtils.toString(
-            jvm.org.apache.hadoop.fs.FileUtil.stat2Paths(fs.listStatus(sink_dir))
-        )  # "{<dir>/part_id=0,<dir>/_SUCCESS,...}"
-        present = {
-            int(m) for m in re.findall(r"/part_id=(-?\d+)(?=[,}])", listing)
-        }
-        for p in present & wanted:
+        for p in _part_ids(spark, f"{out_dir}/{sink}") & set(pending):
             fs.delete(Path(f"{out_dir}/{sink}/part_id={p}"), True)
 
 
@@ -314,38 +313,35 @@ def run_resumable(
     *,
     cfg: ValidationConfig,
 ) -> list[int]:
-    """Resumable run over a partitioned clip table.
+    """Resumable run over a clip table written with
+    ``partitionBy("part_id")``.
 
-    Reads the manifest, prunes finished partitions via a pushed-down
-    ``part_id IN (...)`` predicate (partition pruning on the parquet/Iceberg
-    layout), validates the rest in ONE Spark job, then commits a manifest
-    row per partition. Returns the list of partitions processed this run.
+    One FileSystem listing of the table says which partitions exist, one
+    manifest read (``done_partitions``) says which are done; a run with
+    nothing pending returns ``[]`` having launched no Spark job. Otherwise
+    only the pending ``part_id=N`` directories are read (with the table as
+    ``basePath``, so ``part_id`` stays a column), validated in ONE Spark
+    job, and a manifest row is committed per partition. Returns the list
+    of partitions processed this run.
     """
     started = datetime.now(timezone.utc)
     # commits write local files: refuse a remote manifest before any read,
     # not after every partition is validated and every sink written
     manifest_mod._local_dir(manifest_path)
 
-    clips = spark.read.parquet(clips_path)
-    all_parts = _partition_values(clips)
-    if all_parts is None:  # non-partitioned layout: pay the distinct
-        all_parts = {
-            r["part_id"] for r in clips.select("part_id").distinct().collect()
-        }
-    if None in all_parts:
-        # a NULL part_id lands in the __HIVE_DEFAULT_PARTITION__ directory;
-        # the manifest ledger keys on an int part_id and cannot commit it
+    all_parts = _part_ids(spark, clips_path)
+    if not all_parts:
         raise ValueError(
-            f"clip table {clips_path!r} has rows with a NULL part_id (the "
-            "__HIVE_DEFAULT_PARTITION__ partition); assign every clip a "
-            "part_id before a resumable run"
+            f"clip table {clips_path!r} has no part_id=N directories; a "
+            'resumable run reads a table written with partitionBy("part_id")'
         )
-    done = manifest_mod.done_partitions(spark, manifest_path)
-    pending = sorted(all_parts - done)
+    pending = sorted(all_parts - manifest_mod.done_partitions(spark, manifest_path))
     if not pending:
         return []
 
-    clips = clips.where(F.col("part_id").isin(pending))
+    clips = spark.read.option("basePath", clips_path).parquet(
+        *[f"{clips_path}/part_id={p}" for p in pending]
+    )
     tref = (
         spark.read.parquet(transcript_ref_path) if transcript_ref_path else None
     )
@@ -421,24 +417,23 @@ def run_resumable(
             per_part_rows = pool.submit(_manifest_metrics)
             list(pool.map(_write, sinks))
             per_part = {
-                int(p): (n_rows or 0, n_viol or 0)
+                p: (n_rows or 0, n_viol or 0)
                 for p, n_rows, n_viol in per_part_rows.result()
             }
         run_metrics = dict(obs.get)  # side effect of the violations write
 
         for p in pending:
-            n_rows, n_viol = per_part.get(int(p), (0, 0))
+            n_rows, n_viol = per_part.get(p, (0, 0))
             manifest_mod.commit_partition(
-                manifest_path, int(p), int(n_rows), int(n_viol), started
+                manifest_path, p, n_rows, n_viol, started
             )
     finally:
         res.unpersist()
-    processed = [int(p) for p in pending]
     print(
-        json.dumps({"processed": processed, "metrics": run_metrics}),
+        json.dumps({"processed": pending, "metrics": run_metrics}),
         file=sys.stderr,
     )
-    return processed
+    return pending
 
 
 def table_stats_from_states(

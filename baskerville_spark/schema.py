@@ -1,5 +1,6 @@
 """Typed schemas for the validation engine: clips, transcript reference
-dim, baseline snapshots, and the checkpoint manifest.
+dim and baseline snapshots (the checkpoint manifest's schema lives with
+its pyarrow commits in ``runtime/manifest.py``).
 
 Unlike the reference's stringly ``features`` JSON blob
 (src/baskerville/db/models.py:108), all metrics here are typed columns.
@@ -41,7 +42,7 @@ TRANSCRIPT_REF_SCHEMA = T.StructType(
 )
 
 # --------------------------------------------------------------------------
-# Drift baselines and the checkpoint manifest
+# Drift baselines
 # --------------------------------------------------------------------------
 
 #: Baseline snapshot for drift checks — the generalization of the reference's
@@ -55,20 +56,5 @@ BASELINE_SCHEMA = T.StructType(
         T.StructField("bin_fractions", T.ArrayType(T.DoubleType()), False),
         T.StructField("quantiles", T.ArrayType(T.DoubleType()), True),
         T.StructField("n", T.LongType(), False),
-    ]
-)
-
-#: Checkpoint manifest: Runtime-ledger semantics (src/baskerville/db/models.py:41-75,
-#: completion update base_spark.py:567-579) done idempotently per partition.
-MANIFEST_SCHEMA = T.StructType(
-    [
-        T.StructField("part_id", T.IntegerType(), False),
-        T.StructField("status", T.StringType(), False),  # 'done'
-        T.StructField("attempt", T.IntegerType(), False),
-        T.StructField("n_rows", T.LongType(), True),
-        T.StructField("n_violations", T.LongType(), True),
-        T.StructField("started_at", T.TimestampType(), True),
-        T.StructField("finished_at", T.TimestampType(), True),
-        T.StructField("code_version", T.StringType(), True),
     ]
 )

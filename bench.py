@@ -6,8 +6,9 @@ python bench.py
     Times every queries() gate of __spark_entry__ at $SPARK_GRAFT_SF_DIR
     (default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS], then the
     clip pass: the full validation suite over a generated table of
-    $BENCH_CLIPS clips in $BENCH_PARTS partitions, median of $BENCH_TRIALS
-    timed trials with per-trial loadavg. Prints two lines: the per-gate map
+    BENCH_CLIPS (100,000) clips in BENCH_PARTS (16) partitions, median of
+    BENCH_TRIALS (3) timed trials with per-trial loadavg (module constants).
+    Prints two lines: the per-gate map
       {"queries": {name: sec}, "failed": [...], "clip_bench": {...},
        "sf": ..., "cpus": ...}
     and then the compact headline
@@ -44,9 +45,9 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 CPUS = os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count() or 8))
 # same clip count as the BASELINE.md table so the numbers are comparable
-BENCH_CLIPS = int(os.environ.get("BENCH_CLIPS", "100000"))
-BENCH_PARTS = int(os.environ.get("BENCH_PARTS", "16"))
-BENCH_TRIALS = int(os.environ.get("BENCH_TRIALS", "3"))
+BENCH_CLIPS = 100000
+BENCH_PARTS = 16
+BENCH_TRIALS = 3
 
 
 def _materialize(df) -> int:

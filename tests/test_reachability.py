@@ -108,6 +108,8 @@ ALLOWED_PARAMS = {
         "unread; perfbench's validate_cold layer trace passes it as written",
     ("baskerville_spark.checks.uniqueness", "uniqueness_violations", "n_salt"):
         "unread; perfbench's validate_cold layer trace passes it as written",
+    ("baskerville_spark.runtime.manifest", "done_partitions", "spark"):
+        "unread; perfbench passes it as written",
     ("scripts.check_oracle", "type_check", "name"):
         "unread; perfbench's gates_slow check passes it positionally",
 }

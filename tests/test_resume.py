@@ -329,10 +329,10 @@ def test_done_partitions_file_uri(spark, tmp_path):
     assert done_partitions(spark, str(man_p)) == {3, 5}
 
 
-def test_done_partitions_foreign_schema_falls_back_to_spark(spark, tmp_path):
-    """A parquet file pyarrow cannot read as a manifest row (no ``status``
-    column) sends the read to Spark, which still returns the done-marks of
-    the well-formed files instead of crashing or returning nothing."""
+def test_done_partitions_foreign_schema_marks_nothing_done(spark, tmp_path):
+    """A parquet file that is not a manifest row (no ``status`` column)
+    reads its status as NULL and marks nothing done; the well-formed files'
+    done-marks still come back instead of a crash or an empty set."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
@@ -451,6 +451,81 @@ def test_states_fold_across_interrupted_runs(spark, tmp_path):
         exp["dur_n"], exp["dur_min"], exp["dur_max"], exp["dur_sum"])
     assert sum(got["dur_ms_hist"]) == exp["dur_n"]
     assert abs(got["clip_id_distinct_est"] - exp["nd"]) <= 0.1 * exp["nd"]
+
+
+def _jobs_in(spark, group: str, fn) -> int:
+    """Run ``fn`` under job group ``group``; the number of Spark jobs it
+    launched, read from the status tracker."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_noop_resume_launches_no_job(spark, tmp_path):
+    """With all 40 partitions marked done, a resume lists the table and
+    reads the manifest on the driver only: it returns [] having launched
+    no Spark job (no schema inference, no listing job)."""
+    clips_p, _, man_p, out_p = _paths(tmp_path)
+    write_clips(spark, clips_p, GenConfig(n_rows=2000, n_parts=40))
+    now = datetime.now(timezone.utc)
+    for p in range(40):
+        commit_partition(man_p, p, 50, 0, now)
+    got = []
+    assert _jobs_in(spark, "noop-resume", lambda: got.append(run_resumable(
+        spark, clips_p, man_p, out_p, cfg=ValidationConfig(check_audio=False)
+    ))) == 0
+    assert got == [[]]
+
+
+def test_unpartitioned_table_raises_before_any_job(spark, tmp_path):
+    """A clip table written without partitionBy("part_id") has no
+    part_id=N directories: the resumable run names the path and the layout
+    it needs before any Spark job."""
+    src, clips_p = str(tmp_path / "src"), str(tmp_path / "flat")
+    write_clips(spark, src, GenConfig(n_rows=40, n_parts=2))
+    spark.read.parquet(src).write.parquet(clips_p)
+
+    def run():
+        with pytest.raises(ValueError, match=r'flat.*partitionBy\("part_id"\)'):
+            run_resumable(spark, clips_p, str(tmp_path / "man"),
+                          str(tmp_path / "out"), cfg=ValidationConfig())
+
+    assert _jobs_in(spark, "flat-table", run) == 0
+    assert not (tmp_path / "out").exists()
+
+
+@pytest.mark.parametrize("reliable", [False, True], ids=["local", "reliable"])
+def test_failed_fill_releases_slim_and_checkpoints(spark, tmp_path, monkeypatch, reliable):
+    """A checkpoint fill that raises inside run_validation leaves the
+    session's persisted-RDD count, and with a checkpoint dir its checkpoint
+    files, where the call found them: slim and both checkpoints are
+    released before the error propagates."""
+    from baskerville_spark.checks import stats
+    from baskerville_spark.runtime.runner import run_validation
+
+    clips_p = str(tmp_path / "clips")
+    write_clips(spark, clips_p, CFG)
+    real = stats.column_stats
+    monkeypatch.setattr(stats, "column_stats", lambda slim, **kw: real(slim, **kw).where(
+        "raise_error(concat('injected stats fill failure ', part_id)) IS NULL"))
+    sc, ckdir = spark.sparkContext, tmp_path / "ck"
+    before = sc._jsc.getPersistentRDDs().size()
+    if reliable:
+        sc.setCheckpointDir(str(ckdir))
+    try:
+        with pytest.raises(Exception, match="injected stats fill failure"):
+            run_validation(spark, spark.read.parquet(clips_p),
+                           cfg=ValidationConfig(check_audio=False))
+        assert sc._jsc.getPersistentRDDs().size() == before
+        assert [p for p in ckdir.rglob("*") if p.is_file()] == []
+    finally:
+        sc._jsc.sc().setCheckpointDir(None)
 
 
 def test_null_part_id_raises_named_error(spark, tmp_path):
